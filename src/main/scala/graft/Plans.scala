@@ -1,10 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
 
-/** Optimization tooling (round 16): dump `.explain("formatted")` for a
-  * comma-separated list of ops into a directory — the plan evidence the
-  * optimization log cites (`plans/r16/<op>_before.txt` / `_after.txt`).
+/** Optimization tooling: for a comma-separated list of ops, run each
+  * result through a `noop` write and dump the write's executed plan in
+  * `.explain("formatted")` form into a directory — the plan evidence the
+  * optimization log cites (`plans/r18/<op>_before.txt` / `_after.txt`).
+  * The plan is the final adaptive plan, so runtime rewrites (coalesced
+  * shuffles, AQE optimizer rules) show in it.
   *
   *   runMain graft.Plans <outDir> <suffix> <op1,op2,...> [sfDir]
   *
@@ -34,7 +42,7 @@ object Plans {
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
+        val txt = executedWrite(spark, df).explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
         println(s"[plans] wrote $name")
@@ -43,5 +51,21 @@ object Plans {
       }
     }
     spark.stop()
+  }
+
+  /** The query execution of a `noop` write of `df`, after it ran. */
+  private def executedWrite(spark: SparkSession, df: DataFrame): QueryExecution = {
+    val done = Promise[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.exists(_.isInstanceOf[V2TableWriteExec])) done.trySuccess(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        done.tryFailure(e)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Await.result(done.future, 2.minutes)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

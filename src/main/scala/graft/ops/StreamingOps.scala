@@ -282,9 +282,8 @@ object StreamingOps {
     // oracle is the genuine batch aggregate: file-source backfill must
     // equal batch execution exactly (the streaming ≡ batch contract).
     "stream_avail_now" -> ((s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val sink = newSinkName()
-      val sch = s.read.parquet(s"$d/events.parquet").schema
+      val sch = Tables.schema(s, d, "events")
       // FileStreamSource requires a DIRECTORY; the testdata table is a bare
       // file, so stage a zero-copy symlink inside the session scratch dir
       // (idempotent across verify/bench re-invocations in one JVM).
