@@ -1,22 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Hive catalog mirroring Verify.scala (metastore ops are benched too)
-    System.setProperty("derby.stream.error.file", s"${graft.ops.Scratch.dir}/derby.log")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation", graft.ops.Scratch.ckptDir)
-      .enableHiveSupport()
-      .config("spark.sql.warehouse.dir", s"${graft.ops.Scratch.dir}/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${graft.ops.Scratch.dir}/metastore_db;create=true")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Session warm-up so the first measured query doesn't absorb one-time
     // JVM/codegen/parquet-reader initialization (~4 s): a tiny aggregate, a

@@ -24,19 +24,7 @@ object Plans {
     val suffix = args(1)
     val names = args(2).split(",").filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    System.setProperty("derby.stream.error.file", s"${graft.ops.Scratch.dir}/derby.log")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation", graft.ops.Scratch.ckptDir)
-      .enableHiveSupport()
-      .config("spark.sql.warehouse.dir", s"${graft.ops.Scratch.dir}/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${graft.ops.Scratch.dir}/metastore_db;create=true")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.ops.{Aggregates, Analytics, ApiSurface, DeltaRead, Functions, GraphOps, IcebergRead, Lakehouse, LlmExt, LlmOps, LlmPipeline, LlmPrep, LlmScale, Relational, Round11Ops, Round12Ops, Round12bOps, Round12cOps, Round12dOps, Round13Ops, Round13bOps, Round13cOps, Round14Ops, Round15Ops, Round16Ops, Service, Showcase, StreamingOps, Warehouse, WindowOps}
+import graft.ops.{Aggregates, Analytics, ApiSurface, DeltaRead, Family, Functions, GraphOps, IcebergRead, Lakehouse, LlmExt, LlmOps, LlmPipeline, LlmPrep, LlmScale, Relational, Round11Ops, Round12Ops, Round12bOps, Round12cOps, Round12dOps, Round13Ops, Round13bOps, Round13cOps, Round14Ops, Round15Ops, Round16Ops, Service, Showcase, StreamingOps, Warehouse, WindowOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (operator inventory) and §7.
   *
@@ -16,22 +16,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_group")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Aggregates.queries ++ WindowOps.queries ++
-      Functions.queries ++ StreamingOps.queries ++ LlmOps.queries ++
-      LlmExt.queries ++ LlmScale.queries ++ LlmPipeline.queries ++ Showcase.queries ++ Warehouse.queries ++
-      Analytics.queries ++ LlmPrep.queries ++ ApiSurface.queries ++ Lakehouse.queries ++
-      GraphOps.queries ++ Service.queries ++ IcebergRead.queries ++
-      DeltaRead.queries ++ Round11Ops.queries ++ Round12Ops.queries ++ Round12bOps.queries ++ Round12cOps.queries ++ Round12dOps.queries ++ Round13Ops.queries ++ Round13bOps.queries ++ Round13cOps.queries ++ Round14Ops.queries ++ Round15Ops.queries ++ Round16Ops.queries
+  /** Every operator family, each listed once. */
+  val families: Seq[Family] = Seq(
+    Relational, Aggregates, WindowOps, Functions, StreamingOps, LlmOps, LlmExt, LlmScale,
+    LlmPipeline, Showcase, Warehouse, Analytics, LlmPrep, ApiSurface, Lakehouse, GraphOps,
+    Service, IcebergRead, DeltaRead, Round11Ops, Round12Ops, Round12bOps, Round12cOps,
+    Round12dOps, Round13Ops, Round13bOps, Round13cOps, Round14Ops, Round15Ops, Round16Ops)
+
+  /** One entry per implemented operator from SURVEY.md §2. A name taken by
+    * two families throws on first use. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Family.unique(families.flatMap(_.queries): _*)
 
   /** For each oracle-verified key in `queries`, equivalent SQL runnable by
     * DuckDB on the same parquet tables. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Aggregates.oracles ++ WindowOps.oracles ++
-      Functions.oracles ++ StreamingOps.oracles ++ LlmOps.oracles ++
-      LlmExt.oracles ++ LlmScale.oracles ++ LlmPipeline.oracles ++ Showcase.oracles ++ Warehouse.oracles ++
-      Analytics.oracles ++ LlmPrep.oracles ++ ApiSurface.oracles ++ Lakehouse.oracles ++
-      GraphOps.oracles ++ Service.oracles ++ IcebergRead.oracles ++
-      DeltaRead.oracles ++ Round11Ops.oracles ++ Round12Ops.oracles ++ Round12bOps.oracles ++ Round12cOps.oracles ++ Round12dOps.oracles ++ Round13Ops.oracles ++ Round13bOps.oracles ++ Round13cOps.oracles ++ Round14Ops.oracles ++ Round15Ops.oracles ++ Round16Ops.oracles
+  lazy val oracleSql: Map[String, String] = Family.unique(families.flatMap(_.oracles): _*)
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,32 +10,17 @@ object Verify {
       case Array(a, b)    => (a, b, Set.empty[String])
       case Array(a, b, c) => (a, b, c.split(",").filter(_.nonEmpty).toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Hive catalog (embedded Derby) so DDL survives session/catalog reloads
-    // (warehouse_metastore_ops); the metastore DB lives in the per-JVM
-    // scratch dir — a production deployment points ConnectionURL at a
-    // shared RDBMS instead, everything else is unchanged.
-    System.setProperty("derby.stream.error.file", s"${graft.ops.Scratch.dir}/derby.log")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation", graft.ops.Scratch.ckptDir)
-      .enableHiveSupport()
-      .config("spark.sql.warehouse.dir", s"${graft.ops.Scratch.dir}/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${graft.ops.Scratch.dir}/metastore_db;create=true")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val selected = SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) }
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,6 +38,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // one closing line, so a failed write is counted and named even when
+    // Spark's log buries the per-operator lines above
+    System.err.println(s"[verify] failed ${failed.size} of ${selected.size}" +
+      (if (failed.isEmpty) "" else failed.mkString(": ", ",", "")))
     spark.stop()
   }
 }

@@ -11,9 +11,7 @@ import graft.functions.GeoMean
   * combine → final after shuffle on the group keys) — the shape that scales
   * linearly with input; nothing is collected to the driver.
   */
-object Aggregates {
-  type Q = (SparkSession, String) => DataFrame
-
+object Aggregates extends Family {
   /** Exact decimal aggregate emitted as DOUBLE: internal math stays decimal
     * (associative → partition-order independent), the final cast makes both
     * engines hand the driver an identical float64 (DuckDB's pandas export
@@ -21,7 +19,7 @@ object Aggregates {
     * decimal outputs hash-mismatch on trailing zeros). */
   private def d2d(c: Column): Column = c.cast("double")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Bitwise reduction aggregates (bit_and / bit_or / bit_xor) — the
     // flag-mask rollup shape (permission masks, feature bitsets, bloom
     // words): all three are associative and commutative, so Spark plans
@@ -560,7 +558,7 @@ object Aggregates {
         .orderBy("bucket"))
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // DuckDB ships the same three reduction aggregates; popcount via
     // bit_count on the BIGINT key.
     "agg_bitwise" ->

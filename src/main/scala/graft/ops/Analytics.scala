@@ -17,15 +17,13 @@ import graft.Tables
   * whose per-group state is five numbers. Nothing here holds more than a
   * group's scalar state per task.
   */
-object Analytics {
-  type Q = (SparkSession, String) => DataFrame
-
+object Analytics extends Family {
   /** Session gap: 12h in µs — the events fixture's median inter-event gap
     * is ~7.7h, so this splits every user into several multi-event
     * sessions instead of degenerating to one-per-event or one-per-user. */
   private val GapUs = 43200000000L
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Batch sessionization (the classic gap-based session assignment,
     // batch twin of stream_session): a new session starts where the gap
     // to the previous event exceeds GapUs; the running sum of the
@@ -4347,7 +4345,7 @@ object Analytics {
   /** `win_ewma`'s truncated half-decay weights for lags 0..7. */
   private val EwmaW = Seq(128L, 64L, 32L, 16L, 8L, 4L, 2L, 1L)
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "win_sessionize" ->
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events),
          |g AS (SELECT user_id, ts_us, event_id,

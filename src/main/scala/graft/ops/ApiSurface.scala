@@ -19,10 +19,8 @@ case class LineSlim(l_returnflag: String, l_quantity: Double, l_extendedprice: D
   * range-sorted writes are the zone-map/data-skipping layout for 100 TB
   * scans).
   */
-object ApiSurface {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+object ApiSurface extends Family {
+  val queries: Map[String, Q] = unique(
     // Typed Dataset aggregation: case-class Encoder, typed filter/map,
     // groupByKey + typed aggregators. The lambdas are opaque to Catalyst
     // (scan loses column pruning beyond the .as projection — which is
@@ -427,7 +425,7 @@ object ApiSurface {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // The relational join+rollup the typed pair path must equal.
     "ds_typed_joinwith" ->
       """SELECT c.c_mktsegment AS seg, CAST(COUNT(*) AS BIGINT) AS n_orders,

@@ -26,9 +26,7 @@ import graft.Tables
   * access path); data IO is one pruned parquet scan of the live set.
   * Actions are parsed with Jackson (ships with Spark), not regexes.
   */
-object DeltaRead {
-  type Q = (SparkSession, String) => DataFrame
-
+object DeltaRead extends Family {
   /** Builds the fixture table once per (JVM, sf); returns its root. */
   private[graft] def ensureTable(s: SparkSession, d: String): String = {
     val root = Scratch.opDir("delta_read", d)
@@ -86,7 +84,7 @@ object DeltaRead {
     live.toSeq.map(p => s"$root/$p")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     "source_delta_read" -> ((s, d) => {
       val root = ensureTable(s, d)
       def rollup(v: Long): DataFrame =
@@ -104,7 +102,7 @@ object DeltaRead {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Replays file membership from the deterministic build: version 0
     // serves A (%3=0) and B (%3=1); version 1 serves A and C (%3=2) —
     // the removed B must not be read at the head.

@@ -14,10 +14,8 @@ import org.apache.spark.sql.graftbridge.CosineSimilarity
   * the only exchange). Output types are aligned with the DuckDB oracle
   * (ints cast explicitly where DuckDB widens to BIGINT).
   */
-object Functions {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+object Functions extends Family {
+  val queries: Map[String, Q] = unique(
     "fn_string" -> ((s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
@@ -582,7 +580,7 @@ object Functions {
         .orderBy("bucket"))
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same hex surgery over the same namespaced md5.
     "fn_uuid_deterministic" ->
       """WITH h AS (SELECT c_custkey,

@@ -23,9 +23,7 @@ import graft.Tables
   * integer sum (associative, partition-order free), so both engines hold
   * bit-identical results — no FP drift.
   */
-object GraphOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphOps extends Family {
   /** Fixed power-iteration rounds (rank_micro changes < 0.3%/round by
     * r5 on the fixture graph — comfortably converged for a 25-node
     * graph; the oracle replays the same 5 rounds as chained CTEs). */
@@ -165,7 +163,7 @@ object GraphOps {
     * (and the h·w / a·w products far from Long overflow). */
   private val HitsIters = 3
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Four-cycle (rectangle) census — the quadrilateral motif beside
     // graph_triangles' triangle one (rectangles are the butterfly motif
     // of co-purchase / co-citation analysis: two nodes sharing TWO
@@ -1293,7 +1291,7 @@ object GraphOps {
     * the oracle replays the same rounds as chained CTEs). */
   private val SccIters = 6
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same relaxation chain as graph_closeness, extremes instead of means.
     "graph_eccentricity" -> {
       val iters = (1 to BfsIters).map { i =>

@@ -27,7 +27,7 @@ import graft.Tables
   * over the manifest list); data IO is one pruned parquet scan of the
   * live file set.
   */
-object IcebergRead {
+object IcebergRead extends Family {
 
   private val ManifestEntrySchema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_entry","fields":[
@@ -482,7 +482,7 @@ object IcebergRead {
     root
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, Q] = unique(
     // Row-level DELETE through v2 EQUALITY-delete files (the CDC-writer
     // flavor), applied merge-on-read by a distributed key anti-join:
     // snapshot 1003 kills every %14=0 key; 1002 time-travels intact.
@@ -550,7 +550,7 @@ object IcebergRead {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Key-membership replay: snapshot 1002 = A (%3=0) + C (%3=2) intact;
     // 1003 = the same minus every %14=0 key (the equality-delete set).
     "sink_iceberg_eq_delete" ->

@@ -41,9 +41,7 @@ import graft.Tables
   * lists of manifests, stats pushed into a metadata tree) changes layout,
   * not this code's contract.
   */
-object Lakehouse {
-  type Q = (SparkSession, String) => DataFrame
-
+object Lakehouse extends Family {
   /** One live data file: absolute path + pruning stats on the merge key,
     * plus optional stats on a SECOND clustering key (re-clustering
     * commits record both). Unbounded defaults mean "no information" —
@@ -1091,7 +1089,7 @@ object Lakehouse {
     root
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // The ACID MERGE: graded output is the post-merge table read through
     // the v2 manifest. Oracle replays the batch from `orders` alone —
     // byte-equality proves the COW rewrite + carried-by-reference files
@@ -1599,7 +1597,7 @@ object Lakehouse {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Post-state replay from the source alone: the batch is confined to the
     // lowest key decile (thr = max//10, same floor division both engines);
     // updates bump keys ≡0 mod 7 by 100.0, inserts clone keys ≡0 mod 11

@@ -32,9 +32,7 @@ import graft.Tables
   *    scanned once to build the index and each query touches only its
   *    nprobe clusters.
   */
-object LlmExt {
-  type Q = (SparkSession, String) => DataFrame
-
+object LlmExt extends Family {
   private val SimBits = 60
 
   /** Integer Lloyd k-means geometry: k=8 seed centroids (vec_id < 8), 3
@@ -133,7 +131,7 @@ object LlmExt {
         expr("stack(4, 0, mh0, mh1, 1, mh2, mh3, 2, mh4, mh5, 3, mh6, mh7) AS (band, b0, b1)"))
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // INCREMENTAL near-dup — the production shape: a persisted LSH
     // signature INDEX over the existing corpus (built once, stored as
     // parquet — 4 band rows/doc, O(corpus) once), and each incoming batch
@@ -761,7 +759,7 @@ object LlmExt {
     s.read.parquet(dir)
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Greedy selection replayed as chained CTEs: sel1 is the pure-
     // relevance argmax, each later round scores the remaining pool
     // against the union of prior picks — same integer weights, same

@@ -16,9 +16,7 @@ import org.apache.spark.sql.graftbridge.CosineSimilarity
   * quadratic at 100 TB); similarity search broadcasts the probe set so
   * the corpus is scanned once with no shuffle.
   */
-object LlmOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object LlmOps extends Family {
   /** 3-token shingles per doc, distinct, via array transform (no join). */
   private[ops] def shingles(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
@@ -95,7 +93,7 @@ object LlmOps {
       .select("a", "b", "jaccard")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Exact dedup by content hash: keep lowest doc_id per md5(text).
     "llm_dedup_exact" -> ((s, d) => {
       val h = Tables.documents(s, d).withColumn("h", md5(col("text")))
@@ -196,7 +194,7 @@ object LlmOps {
        |          JOIN keep ON x.s = keep.s
        |          GROUP BY 1, 2)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "llm_dedup_exact" ->
       """WITH h AS (SELECT doc_id, lang, md5(text) AS h FROM documents),
         |k AS (SELECT h, MIN(doc_id) AS keep_id FROM h GROUP BY h)

@@ -19,9 +19,7 @@ import graft.Tables
   * chunking are pure per-row projections (no shuffle at all); top-terms is
   * two hash aggregations plus a per-doc window.
   */
-object LlmPipeline {
-  type Q = (SparkSession, String) => DataFrame
-
+object LlmPipeline extends Family {
   /** md5-derived uniform split key, identical in DuckDB (llm_sample_split
     * family): u < 0.8·2³² → train, u ≥ 0.9·2³² → test. */
   private val TrainCap = 3435973836L
@@ -31,7 +29,7 @@ object LlmPipeline {
   private val BpeRounds = 5
   private val ChunkS = 48
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Connected components over the near-dup graph (Jaccard ≥ 0.5 pairs
     // from the shared posting-list generator): min-label propagation WITH
     // POINTER DOUBLING to a fixpoint — each node ends with the smallest
@@ -757,7 +755,7 @@ object LlmPipeline {
        |  CAST(length(sym) AS INT) AS sym_len, length(sym) > 1 AS is_merged
        |FROM v GROUP BY sym ORDER BY n_occurrences DESC, sym""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "llm_bpe_merge" -> bpeMergeOracle,
     "llm_bpe_encode" -> bpeEncodeOracle,
     "llm_bpe_vocab" -> bpeVocabOracle,

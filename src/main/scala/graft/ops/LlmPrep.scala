@@ -16,9 +16,7 @@ import graft.Tables
   * sampling is a projection + explode whose fan-out is bounded by the
   * sample stride.
   */
-object LlmPrep {
-  type Q = (SparkSession, String) => DataFrame
-
+object LlmPrep extends Family {
   /** md5-derived uniform key in [0, 2³²) — the same layout-independent,
     * engine-shared randomness the split/sample family uses. */
   private val UExpr =
@@ -39,7 +37,7 @@ object LlmPrep {
   private val FrameLen = 32
   private val Stride = 4
 
-  private val mainQueries: Map[String, Q] = Map(
+  private val mainQueries: Seq[(String, Q)] = Seq(
     // Sequence packing (concat-then-split): docs are ordered by a
     // layout-independent hash inside 32 independent buckets, token counts
     // prefix-summed per bucket, and each doc assigned to the context
@@ -194,7 +192,7 @@ object LlmPrep {
     * n_chars + header. */
   private val RecHeader = 64L
 
-  private val shardQueries: Map[String, Q] = Map(
+  private val shardQueries: Seq[(String, Q)] = Seq(
     // Webdataset-style shard packing — the byte-budget twin of
     // llm_pack_sequences' token packing: records (payload + fixed header)
     // are hash-ordered inside 8 independent bucket streams, prefix-summed,
@@ -322,9 +320,9 @@ object LlmPrep {
   )
 
   /** Deterministic weighted sampling + 4-bit product-style quantization
-    * (split out of the main Map only to keep it under the compiler's
+    * (split out of the main list only to keep it under the compiler's
     * method-size comfort zone; merged in `queries` below). */
-  private val extraQueries: Map[String, Q] = Map(
+  private val extraQueries: Seq[(String, Q)] = Seq(
     // Weighted sampling without replacement, deterministic (the mixture-
     // construction primitive next to llm_sample_stratified's equal-
     // fraction strata): priority = md5-hash(doc_id) DIV weight — a doc
@@ -544,7 +542,7 @@ object LlmPrep {
     * candidate join sub-quadratic on any corpus. */
   private val PhashBucketCap = 64L
 
-  private val wave6Queries: Map[String, Q] = Map(
+  private val wave6Queries: Seq[(String, Q)] = Seq(
     // Perceptual-hash near-dup over the stubbed image codec (the visual
     // member of the dedup family, next to simhash's token space): each
     // doc's byte stream is resized to a fixed 31-tile grid (tile length
@@ -693,7 +691,7 @@ object LlmPrep {
     * that must differ before a frame starts a new shot). */
   private val SceneCutBits = 5
 
-  private val wave10Queries: Map[String, Q] = Map(
+  private val wave10Queries: Seq[(String, Q)] = Seq(
     // Video scene-cut detection over the stubbed codec (the shot-
     // boundary stage of a video ingest — every clip pipeline segments
     // before captioning/embedding): frames are the 32-byte stride-1
@@ -1043,7 +1041,7 @@ object LlmPrep {
 
   /** Round-10 wave: the distributed-dataloader contract + the packed-
     * attention accounting that justifies llm_pack_sequences downstream. */
-  private val wave11Queries: Map[String, Q] = Map(
+  private val wave11Queries: Seq[(String, Q)] = Seq(
     // EXIF privacy audit — the metadata-governance step of image ingest
     // (mm_decode_meta reads structural fields; this audits the PRIVACY
     // ones a release pipeline must strip): deterministic md5-derived
@@ -1474,11 +1472,10 @@ object LlmPrep {
     })
   )
 
-  val queries: Map[String, Q] =
-    mainQueries ++ extraQueries ++ shardQueries ++ wave6Queries ++ wave10Queries ++
-      wave11Queries
+  val queries: Map[String, Q] = unique(mainQueries ++ extraQueries ++ shardQueries ++
+    wave6Queries ++ wave10Queries ++ wave11Queries: _*)
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same md5 facets, same exposure ledger.
     "mm_exif_audit" ->
       """WITH i AS (SELECT doc_id, source,

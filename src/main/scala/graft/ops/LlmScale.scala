@@ -13,9 +13,7 @@ import graft.Tables
   * sequence packing (the fixed-window batch-assembly stage of a training
   * pipeline).
   */
-object LlmScale {
-  type Q = (SparkSession, String) => DataFrame
-
+object LlmScale extends Family {
   private val SrpDims = 64 // embeddings.parquet vector width (TESTDATA.md)
   private val PackCapacity = 2048
 
@@ -52,7 +50,7 @@ object LlmScale {
       }
     })
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // RAG citation audit — does the answer's bibliography actually exist
     // and come from the right shelf? (llm_injection_screen guards the
     // prompt; this guards the CITATIONS a RAG answer emits): every 7th
@@ -1044,7 +1042,7 @@ object LlmScale {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same 1.25×-span citations, same existence join, same ppms.
     "llm_rag_citation_check" ->
       """WITH mx AS (SELECT MAX(doc_id) AS max_id FROM documents),

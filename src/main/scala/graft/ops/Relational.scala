@@ -13,14 +13,12 @@ import graft.Tables
   * DECIMAL(18,4) per-row-cast recipe (rule 2); event timestamps compare on
   * exact raw nanoseconds and are emitted second-formatted (rule 3).
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
+object Relational extends Family {
   private val HourUs = 3600L * 1000 * 1000
 
   private def fmtTs(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // ---- §2.1 scans ----
     "scan_parquet" -> ((s, d) => Tables.nation(s, d).orderBy("n_nationkey")),
 
@@ -1589,7 +1587,7 @@ object Relational {
   /** Columns of df as a stable projection (helper for source_csv_json_infer). */
   private def count_all_cols(df: DataFrame): Seq[Column] = df.columns.toSeq.map(c => col(c).cast("string").as(c))
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "scan_parquet" ->
       "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
 

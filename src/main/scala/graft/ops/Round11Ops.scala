@@ -11,13 +11,11 @@ import graft.Tables
   * small file. Same engine-exactness laws, same paired impl/oracle
   * discipline as every other family.
   */
-object Round11Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round11Ops extends Family {
   private def u(ns: String, id: String = "doc_id") =
     s"CAST(conv(substring(md5(concat('$ns:', CAST($id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Bucket PRUNING — the read-side payoff sink_bucketed's layout buys
     // (writing buckets is half the story; a point-lookup on the bucket
     // key must scan 1/16th of the files, and the plan SAYS so —
@@ -740,7 +738,7 @@ object Round11Ops {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same literal point-lookup replayed without the bucket layout.
     "warehouse_bucket_pruning" ->
       """SELECT CAST(o_custkey AS BIGINT) AS o_custkey,

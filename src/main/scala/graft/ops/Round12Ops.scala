@@ -13,9 +13,7 @@ import graft.Tables
   * seconds), same paired impl/oracle style, same engine-exactness laws
   * (exact-integer metrics, md5 shared randomness, DECIMAL money).
   */
-object Round12Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round12Ops extends Family {
   /** Spec channels for the Arrow-batch proof, set by `udf_arrow_batch`
     * on execution: number of Arrow batches seen and total rows across
     * them. rows/batches >> 1 proves whole columnar batches flow through
@@ -23,7 +21,7 @@ object Round12Ops {
   @volatile var arrowBatches: org.apache.spark.util.LongAccumulator = _
   @volatile var arrowRows: org.apache.spark.util.LongAccumulator = _
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Arrow-vectorized batch UDF — the Scala-native `mapInArrow` class of
     // operator: whole Arrow RecordBatches in, whole RecordBatches out,
     // user code touching columnar VECTORS (VarCharVector/BigIntVector),
@@ -1165,7 +1163,7 @@ object Round12Ops {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Byte-level profile replay: strlen is BYTES in DuckDB; tokens =
     // non-empty pieces after splitting on ASCII-whitespace runs.
     "udf_arrow_batch" ->

@@ -9,9 +9,7 @@ import graft.Tables
   * 1.6k lines; a fresh small file keeps the incremental recompile at ~1 s).
   * Same paired impl/oracle style, same engine-exactness laws.
   */
-object Round12bOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round12bOps extends Family {
   /** Truncated exponential weights (α≈1/2, 7 lags) for the Keltner
     * midline — finite-lag integer EWMA, the win_ewma law. */
   private val KeltnerW = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
@@ -44,7 +42,7 @@ object Round12bOps {
         s"t${i + 1}" -> s"t$i $div 4")
     }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // EXCEPT ALL — bag difference (multiplicities subtract, floor 0), the
     // third bag-algebra operator next to set_union_all/set_intersect_all.
     // Spark plans the same counted-group hash join as INTERSECT ALL; at
@@ -1135,7 +1133,7 @@ object Round12bOps {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same bag difference, same counted-group contract.
     "set_except_all" ->
       """SELECT nationkey, COUNT(*) AS n_exall FROM (

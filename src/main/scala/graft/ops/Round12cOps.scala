@@ -14,9 +14,7 @@ import graft.Tables
   * DuckDB `//` floors, so every division whose numerator can go negative
   * is written sign-split (magnitude DIV, then negate) in BOTH dialects.
   */
-object Round12cOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round12cOps extends Family {
   /** Finite-lag integer EWMA weights (α≈1/2): fast 4-lag and slow 7-lag
     * probes for the Chaikin oscillator pair — the win_ewma law. */
   private val FastW = Seq(8L, 4L, 2L, 1L)
@@ -29,7 +27,7 @@ object Round12cOps {
   /** 58^k powers for the 6 unrolled base58 digit extractions. */
   private val B58Pow = Seq(1L, 58L, 3364L, 195112L, 11316496L, 656356768L)
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Chaikin Accumulation/Distribution — per daily bar the money-flow
     // multiplier ((c-l)-(h-c))/(h-l) scaled ×1000 by bar volume
     // (sign-split DIV), AD = running sum, oscillator = fast − slow
@@ -1382,7 +1380,7 @@ object Round12cOps {
          |    * $sgn > 0 THEN 1 ELSE 0 END)""".stripMargin
     }.mkString(" + ")
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same bars, same sign-split money flow, same two weight-vector
     // folds (DuckDB // floors, hence the mirrored magnitude form).
     "win_chaikin_ad" -> {

@@ -12,9 +12,7 @@ import graft.Tables
   * negative-capable division sign-split (Spark DIV truncates, DuckDB //
   * floors), DuckDB SUMs re-CAST from HUGEINT.
   */
-object Round12dOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round12dOps extends Family {
   /** 12 unrolled amortization months — balance stays positive by
     * construction (payment = P/24), so every division is non-negative.
     * One generator, both dialects (only the DIV token differs). */
@@ -25,7 +23,7 @@ object Round12dOps {
         s"bal${k + 1}" -> s"bal$k + i$k - pay")
     }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Fixed-payment amortization schedule — 12 unrolled months of
     // integer interest accrual (bal·bp DIV 120000) against a declared
     // payment P/24; final balance, total interest, principal retired
@@ -1478,7 +1476,7 @@ object Round12dOps {
           s"ELSE a$i * $k1 + $k2 END"))
     }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same 12-step ledger through the same generator.
     "fn_amortization" -> {
       val walked = amortSteps("//").foldLeft(

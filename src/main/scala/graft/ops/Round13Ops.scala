@@ -14,12 +14,10 @@ import graft.Tables
   * ppm, DuckDB SUMs re-CAST from HUGEINT, sign-split DIV where a
   * negative could reach it.
   */
-object Round13Ops {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round13Ops extends Family {
   import scala.jdk.CollectionConverters._
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Unicode NORMALIZATION audit — the canonicalization gate every
     // multi-script corpus passes before fingerprinting/dedup ("café" has
     // two code-point spellings; an un-normalized corpus hashes it both
@@ -1552,7 +1550,7 @@ object Round13Ops {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "llm_unicode_normalize_audit" ->
       """WITH t AS (
         |  SELECT doc_id, lang, text ||

@@ -12,9 +12,7 @@ import graft.Tables
   * DECIMAL(38,0)/HUGEINT for wide products, integer DIV on the same
   * positive operands in both engines.
   */
-object Round13bOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object Round13bOps extends Family {
   /** ICAO 9303 check digit over a 9-char MRZ field: value(c)·w cycled
     * 7,3,1, mod 10. Shared by the impl (Spark SQL fragment) so the
     * issuance and validation sides use the identical formula.
@@ -27,7 +25,7 @@ object Round13bOps {
        |        ELSE ascii(substring($field, i, 1)) - 55 END)
        |  * element_at(array(7, 3, 1), ((i - 1) % 3) + 1)) % 10""".stripMargin
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Bradley–Terry arena ranking — the LLM-eval leaderboard fit (Chatbot-
     // Arena style): pairwise battles between 6 models, winner drawn by the
     // exact Bradley–Terry generative law (event_id % (s_a+s_b) < s_a with
@@ -875,7 +873,7 @@ object Round13bOps {
        |        ELSE ascii(substring($field, i, 1)) - 55 END)
        |  * ([7, 3, 1])[((i - 1) % 3) + 1])) AS BIGINT) % 10""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "agg_bradley_terry" ->
       """WITH bt AS (
         |  SELECT user_id % 6 AS a, (user_id // 7) % 6 AS b, event_id

@@ -9,10 +9,8 @@ import graft.Tables
 /** Round-13 operators, third compilation unit (waves 24+) — same paired
   * impl/oracle style and engine-exactness laws as Round13Ops/Round13bOps.
   */
-object Round13cOps {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+object Round13cOps extends Family {
+  val queries: Map[String, Q] = unique(
     // Concurrent-session detection — the account-sharing signal a person
     // service audits (one principal, overlapping live sessions): each
     // login opens a session of value-seconds; the classic sweep-line
@@ -1311,7 +1309,7 @@ object Round13cOps {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "service_concurrent_sessions" ->
       """WITH sess AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,

@@ -16,10 +16,8 @@ import graft.Tables
   * over matcher link pairs, householding over normalized addresses, and
   * DSAR fulfilment-latency SLA against the consent ledger.
   */
-object Round14Ops {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+object Round14Ops extends Family {
+  val queries: Map[String, Q] = unique(
     // Identity-graph clustering — the step AFTER join_fellegi_sunter
     // scores pairs: the matcher's accepted links become an undirected
     // graph over per-system person records (3 source systems, record id
@@ -1165,7 +1163,7 @@ object Round14Ops {
        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, node) AS r
        |    FROM s$i) q3 WHERE r <= 8)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "fn_transliterate_fold" ->
       """WITH t AS (
         |  SELECT CAST(c_custkey % 5 AS INT) AS cls,

@@ -14,10 +14,8 @@ import graft.Tables
   * Fellegi–Sunter m/u weights — the unsupervised parameter-learning step
   * (Splink-style) the identity stack's scoring layer lacked.
   */
-object Round15Ops {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+object Round15Ops extends Family {
+  val queries: Map[String, Q] = unique(
     // EM-estimated Fellegi–Sunter m/u weights — join_fellegi_sunter scores
     // with DECLARED constants; every real linkage deployment learns the
     // per-field m (P(agree|match)) and u (P(agree|unmatch)) probabilities
@@ -2507,7 +2505,7 @@ object Round15Ops {
        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, node) AS r
        |    FROM s$i) q WHERE r <= $k)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "llm_ann_hnsw_layered" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |nn AS (SELECT COUNT(*) AS n, (COUNT(*) + 15) // 16 AS n2,

@@ -15,10 +15,8 @@ import graft.Tables
   * did not), plus the two interval/shrinkage estimators the CTR family
   * lacked (Wilson score bounds, James–Stein).
   */
-object Round16Ops {
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+object Round16Ops extends Family {
+  val queries: Map[String, Q] = unique(
     // ANN index DELETE + threshold compaction — the GDPR-erasure leg that
     // completes the persisted IVF lifecycle (build: llm_ann_ivf_pq, serve:
     // llm_ann_filtered, maintain: llm_ann_index_maintain). A 1-in-7
@@ -2433,7 +2431,7 @@ object Round16Ops {
        |    GROUP BY 1, 2) nm ON nm.x = p.x AND nm.v = p.v)""".stripMargin
   }.mkString(",\n")
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "graph_articulation" ->
       s"""WITH $RingChainCtes,
          |excl AS (SELECT v AS x FROM nodes UNION ALL SELECT -1),

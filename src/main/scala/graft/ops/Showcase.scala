@@ -16,13 +16,11 @@ import graft.Tables
   * cut is a total order, and dates are emitted as fixed-width strings
   * (lexicographic == chronological).
   */
-object Showcase {
-  type Q = (SparkSession, String) => DataFrame
-
+object Showcase extends Family {
   private def rev(c1: org.apache.spark.sql.Column, c2: org.apache.spark.sql.Column) =
     sum(dec(c1 * (lit(1) - c2))).cast("double")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // TPC-H Q3 (shipping priority): segment-filtered customers' orders
     // placed before a date with lineitems shipped after it, top-10 by
     // revenue. Customer side is broadcast (segment filter keeps it small
@@ -546,7 +544,7 @@ object Showcase {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     "tpch_q3" ->
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
         |  o_orderpriority,

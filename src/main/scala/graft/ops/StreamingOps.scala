@@ -146,12 +146,10 @@ private[ops] class SessionTimerProcessor
   * DuckDB cannot express (rows-only driver check; full assertions in
   * ScalaTest).
   */
-object StreamingOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object StreamingOps extends Family {
   private def fmt(c: org.apache.spark.sql.Column) = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // 1-hour tumbling windows: count + exact value cents per event_type.
     "stream_tumbling" -> ((s, d) =>
       Tables.events(s, d)
@@ -1240,7 +1238,7 @@ object StreamingOps {
     }
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // The three pure-streaming ops consume a FIXED MemoryStream input, so
     // their correct output is a known constant — the oracle is that golden
     // result as VALUES (DuckDB can't run a watermarter, but it can assert

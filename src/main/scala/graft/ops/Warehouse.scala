@@ -15,9 +15,7 @@ import graft.Tables
   * RUNTIME via a dynamicpruning subquery — the flagship Spark warehouse
   * optimization for star-schema scans).
   */
-object Warehouse {
-  type Q = (SparkSession, String) => DataFrame
-
+object Warehouse extends Family {
 
   /** One bloom-configured child session per parent session (not per
     * invocation — best-of-2 bench and repeated Verify runs would otherwise
@@ -37,7 +35,7 @@ object Warehouse {
       }
     }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     // Enforced write with QUARANTINE — the constraint-checked ingest
     // every warehouse needs in front of untrusted feeds: instead of
     // failing the whole batch on the first bad row (ANSI) or silently
@@ -1091,7 +1089,7 @@ object Warehouse {
       .partitionBy("o_year").parquet(dir)
   }
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // The constraint router replayed: same mod-97 corruption, same
     // first-violation precedence (null_key > negative_price > year).
     "warehouse_quarantine" ->

@@ -13,14 +13,12 @@ import graft.Tables
   * total. Money sums inside frames use exact arithmetic (DECIMAL or integer
   * cents) so running values hash-match DuckDB bit-for-bit.
   */
-object WindowOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object WindowOps extends Family {
   /** Exact integer cents from a 2-dp double price: round(x*100) is the same
     * IEEE double then the same half-up rounding in Spark and DuckDB. */
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = unique(
     "win_rank" -> ((s, d) => {
       val bucket = (floor(col("o_totalprice") / 50000) * 50000).cast("long").as("price_bucket")
       val w1 = Window.partitionBy("o_orderstatus").orderBy(desc("price_bucket"))
@@ -470,7 +468,7 @@ object WindowOps {
     })
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = unique(
     // Same truncated-weight folds (weights and masses regenerated from
     // the same Seqs), same sign-safe signal mean.
     "win_macd" -> {

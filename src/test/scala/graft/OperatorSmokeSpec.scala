@@ -8,9 +8,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OperatorSmokeSpec extends AnyFunSuite with SparkFixture {
 
-  // Ops whose result can legitimately be small but must still be non-empty.
-  private val mustBeNonEmpty = SparkEntry.queries.keySet
-
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, sf).count()
@@ -32,56 +29,26 @@ class OperatorSmokeSpec extends AnyFunSuite with SparkFixture {
     assert(noOracle.isEmpty, s"ops without oracle: $noOracle")
   }
 
-  test("no operator key is silently shadowed across family maps") {
-    // ++-merging the family maps makes a duplicate key LAST-WINS silently;
-    // round 7 found two ops dead that way (llm_pack_lang,
-    // warehouse_cache_join — since renamed). Sum-of-sizes equality makes
-    // any future duplicate an immediate failure naming the key.
-    import graft.ops._
-    val families: Seq[(String, Map[String, _])] = Seq(
-      "Relational" -> Relational.queries, "Aggregates" -> Aggregates.queries,
-      "WindowOps" -> WindowOps.queries, "Functions" -> Functions.queries,
-      "StreamingOps" -> StreamingOps.queries, "LlmOps" -> LlmOps.queries,
-      "LlmExt" -> LlmExt.queries, "LlmScale" -> LlmScale.queries,
-      "LlmPipeline" -> LlmPipeline.queries, "Showcase" -> Showcase.queries,
-      "Warehouse" -> Warehouse.queries, "Analytics" -> Analytics.queries,
-      "LlmPrep" -> LlmPrep.queries, "ApiSurface" -> ApiSurface.queries,
-      "Lakehouse" -> Lakehouse.queries, "GraphOps" -> GraphOps.queries,
-      "Service" -> Service.queries, "IcebergRead" -> IcebergRead.queries,
-      "DeltaRead" -> DeltaRead.queries, "Round11Ops" -> Round11Ops.queries,
-      "Round12Ops" -> Round12Ops.queries, "Round12bOps" -> Round12bOps.queries,
-      "Round12cOps" -> Round12cOps.queries,
-      "Round12dOps" -> Round12dOps.queries,
-      "Round13Ops" -> Round13Ops.queries,
-      "Round13bOps" -> Round13bOps.queries,
-      "Round13cOps" -> Round13cOps.queries,
-      "Round14Ops" -> Round14Ops.queries,
-      "Round15Ops" -> Round15Ops.queries,
-      "Round16Ops" -> Round16Ops.queries)
-    val all = families.flatMap { case (fam, m) => m.keys.map(_ -> fam) }
-    val dups = all.groupBy(_._1).filter(_._2.length > 1)
-    assert(dups.isEmpty,
-      s"duplicate op keys: ${dups.map { case (k, fs) => s"$k in ${fs.map(_._2).mkString("+")}" }}")
-    assert(all.size == SparkEntry.queries.size)
-    // a duplicate INSIDE one Map literal collapses before runtime can see
-    // it — scan the source for op-entry patterns as the stronger guard.
-    // FAIL (don't skip) when the dir is absent: a silent no-op here would
-    // quietly disable the stronger of the two shadowing guards.
-    val opsDir = java.nio.file.Paths.get("src/main/scala/graft/ops")
-    assert(java.nio.file.Files.isDirectory(opsDir),
-      s"ops source dir not found from cwd ${System.getProperty("user.dir")} — " +
-        "run tests from the repo root so the source-scan guard can run")
-    val entry = """"([a-z0-9_]+)" -> \(\(s""".r
-    val stream = java.nio.file.Files.list(opsDir)
-    val srcFiles = try stream.toArray.toSeq.map(_.toString) finally stream.close()
-    val fromSrc = srcFiles.filter(_.endsWith(".scala"))
-      .flatMap { f =>
-        val body = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(f)), java.nio.charset.StandardCharsets.UTF_8)
-        entry.findAllMatchIn(body).map(m => m.group(1) -> f)
-      }
-    val srcDups = fromSrc.groupBy(_._1).filter(_._2.length > 1)
-    assert(srcDups.isEmpty, s"duplicate op entries in source: ${srcDups.keys}")
+  test("Family.unique rejects a name given twice, inside one family or across two") {
+    import graft.ops.Family
+    val inOne = intercept[IllegalArgumentException] {
+      Family.unique("op_a" -> 1, "op_b" -> 2, "op_a" -> 3)
+    }
+    assert(inOne.getMessage.contains("op_a") && !inOne.getMessage.contains("op_b"))
+    object FamA extends Family {
+      val queries: Map[String, Q] = unique("op_x" -> ((s, _) => s.range(1).toDF()))
+      val oracles: Map[String, String] = unique("op_x" -> "SELECT 0 AS id")
+    }
+    object FamB extends Family {
+      val queries: Map[String, Q] = unique(
+        "op_y" -> ((s, _) => s.range(1).toDF()), "op_x" -> ((s, _) => s.range(2).toDF()))
+      val oracles: Map[String, String] = unique("op_y" -> "SELECT 0 AS id")
+    }
+    val across = intercept[IllegalArgumentException] {
+      Family.unique(Seq(FamA, FamB).flatMap(_.queries): _*)
+    }
+    assert(across.getMessage.contains("op_x") && !across.getMessage.contains("op_y"))
+    assert(Family.unique(Seq(FamA, FamB).flatMap(_.oracles): _*).keySet == Set("op_x", "op_y"))
   }
 
   test("scan_parquet preserves the 25 nations in key order") {

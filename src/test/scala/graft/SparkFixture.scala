@@ -4,29 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local session mirroring the driver harness config
-  * (Verify.scala:10-15): local[4], shuffle=4, UTC, UI off. One JVM-wide
-  * session keeps the whole test run fast.
+/** Shared local session: the engine's own `Sessions.builder` (Hive catalog
+  * on embedded Derby, UTC, UI off) at local[4] with 4 shuffle partitions,
+  * plus the config-driven `GraftExtensions` path, which GraftExtensionsSpec
+  * asserts on a clean child session. One JVM-wide session keeps the whole
+  * test run fast.
   */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    // mirror the driver/Verify Hive-catalog setup (embedded Derby in the
-    // per-JVM scratch dir) so catalog/metastore ops behave identically
-    System.setProperty("derby.stream.error.file", s"${graft.ops.Scratch.dir}/derby.log")
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Sessions.builder("4")
       .appName("graft-test")
-      // the config-driven deployment path (GraftExtensionsSpec asserts
-      // its effects on a clean child session)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation", graft.ops.Scratch.ckptDir)
-      .enableHiveSupport()
-      .config("spark.sql.warehouse.dir", s"${graft.ops.Scratch.dir}/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=${graft.ops.Scratch.dir}/metastore_db;create=true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
