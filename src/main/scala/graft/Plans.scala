@@ -20,6 +20,10 @@ import scala.concurrent.duration._
   */
 object Plans {
   def main(args: Array[String]): Unit = {
+    if (args.length < 3) {
+      System.err.println("usage: graft.Plans <outDir> <suffix> <op1,op2,...> [sfDir]")
+      sys.exit(2)
+    }
     val outDir = args(0)
     val suffix = args(1)
     val names = args(2).split(",").filter(_.nonEmpty)

@@ -9,6 +9,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, Set.empty[String])
       case Array(a, b, c) => (a, b, c.split(",").filter(_.nonEmpty).toSet)
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [op1,op2,...]")
+        sys.exit(2)
     }
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

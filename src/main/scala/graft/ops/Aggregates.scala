@@ -309,7 +309,7 @@ object Aggregates extends Family {
     "agg_cms_freq" -> ((s, d) => {
       val depth = 4; val width = 64
       val bucketOf = (kExpr: String, j: String) =>
-        s"CAST(conv(substring(md5(concat($j, ':', $kExpr)), 1, 8), 16, 10) AS BIGINT) % $width"
+        s"${md5Bits(s"concat($j, ':', $kExpr)", 8)} % $width"
       val cells = Tables.orders(s, d)
         .select(col("o_custkey").cast("string").as("k"))
         // single-row-group scan → one task; spread the keys before the
@@ -589,16 +589,16 @@ object Aggregates extends Family {
     // DuckDB rebuilds the identical 256-cell sketch and the ESTIMATES
     // hash-match, not just a verdict.
     "agg_cms_freq" ->
-      """WITH ks AS (SELECT CAST(o_custkey AS VARCHAR) AS k FROM orders),
+      s"""WITH ks AS (SELECT CAST(o_custkey AS VARCHAR) AS k FROM orders),
         |cells AS (
-        |  SELECT j, ('0x' || substring(md5(j || ':' || k), 1, 8))::BIGINT % 64 AS bucket,
+        |  SELECT j, ${duckMd5Bits("j || ':' || k", 8)} % 64 AS bucket,
         |         COUNT(*) AS cnt
         |  FROM ks, unnest([0, 1, 2, 3]) AS t(j) GROUP BY 1, 2),
         |topk AS (SELECT o_custkey, COUNT(*) AS exact_n FROM orders
         |         GROUP BY 1 ORDER BY exact_n DESC, o_custkey LIMIT 20),
         |probe AS (
         |  SELECT o_custkey, exact_n, j,
-        |    ('0x' || substring(md5(j || ':' || CAST(o_custkey AS VARCHAR)), 1, 8))::BIGINT
+        |    ${duckMd5Bits("j || ':' || CAST(o_custkey AS VARCHAR)", 8)}
         |      % 64 AS bucket
         |  FROM topk, unnest([0, 1, 2, 3]) AS t(j))
         |SELECT p.o_custkey, p.exact_n, MIN(c.cnt) AS cms_est,

@@ -738,7 +738,7 @@ object Analytics extends Family {
           expr("CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)").as("cents"),
           explode(expr("sequence(0, 19)")).as("b"))
         .withColumn("v", expr(
-          "CAST(conv(substring(md5(concat(CAST(o_orderkey AS STRING), ':', CAST(b AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000000"))
+          s"${md5Bits("concat(CAST(o_orderkey AS STRING), ':', CAST(b AS STRING))", 8)} % 1000000"))
         .withColumn("w", expr(s"CAST($thresholds AS BIGINT)"))
         .groupBy(col("b").cast("bigint").as("replica"))
         .agg(sum("w").as("n_eff"), sum(expr("w * cents")).as("w_sum"))
@@ -1063,7 +1063,7 @@ object Analytics extends Family {
     "agg_ab_srm" -> ((s, d) =>
       Tables.orders(s, d)
         .select(expr(
-          "CAST(conv(substring(md5(concat('srm:', CAST(o_orderkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2")
+          s"${md5Bits("srm", "o_orderkey", 8)} % 2")
           .as("arm"))
         .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
           sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
@@ -1398,7 +1398,7 @@ object Analytics extends Family {
     // to 100·num > 599·den. Treatment 2 carries a planted +25 shift.
     "agg_friedman" -> ((s, d) => {
       def sc(j: Int) =
-        s"(CAST(conv(substring(md5(concat('t$j:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000 + ${j * 25})"
+        s"(${md5Bits(s"t$j", "doc_id", 8)} % 1000 + ${j * 25})"
       def rank(j: Int) = {
         val others = (0 to 2).filter(_ != j).map { i =>
           s"(CASE WHEN ${sc(i)} < ${sc(j)} OR (${sc(i)} = ${sc(j)} AND $i < $j) THEN 1 ELSE 0 END)"
@@ -1448,13 +1448,11 @@ object Analytics extends Family {
     // three times in four and answers independently otherwise, so the
     // planted κ is real and the chance correction has work to do.
     "agg_cohens_kappa" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d)
         .select(col("doc_id"))
-        .withColumn("r1", expr(s"${u("k1")} % 3"))
+        .withColumn("r1", expr(s"${md5Bits("k1", "doc_id", 8)} % 3"))
         .withColumn("r2",
-          expr(s"IF(${u("k2")} % 4 = 0, ${u("k3")} % 3, ${u("k1")} % 3)"))
+          expr(s"IF(${md5Bits("k2", "doc_id", 8)} % 4 = 0, ${md5Bits("k3", "doc_id", 8)} % 3, ${md5Bits("k1", "doc_id", 8)} % 3)"))
       val m = t.agg(count(lit(1)).as("n"),
         sum(when(col("r1") === col("r2"), 1L).otherwise(0L)).as("agree"),
         sum(when(col("r1") === 0, 1L).otherwise(0L)).as("m1_0"),
@@ -1530,7 +1528,7 @@ object Analytics extends Family {
     // %10<5) so the discordance is real.
     "agg_mcnemar" -> ((s, d) => {
       def verdict(ns: String, thr: Int) =
-        expr(s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10 < $thr")
+        expr(s"${md5Bits(ns, "doc_id", 8)} % 10 < $thr")
       Tables.documents(s, d)
         .select(verdict("ma", 6).as("a_ok"), verdict("mb", 5).as("b_ok"))
         .agg(count(lit(1)).as("n"),
@@ -1550,7 +1548,7 @@ object Analytics extends Family {
     // graph_triangle_estimate. All integer; one pass, two cheap flags.
     "agg_capture_recapture" -> ((s, d) => {
       def coin(ns: String) =
-        expr(s"CAST(conv(substring(md5(concat('$ns:', CAST(c_custkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 4 = 0")
+        expr(s"${md5Bits(ns, "c_custkey", 8)} % 4 = 0")
       Tables.customer(s, d)
         .select(coin("cap_a").as("a"), coin("cap_b").as("b"))
         .agg(count(lit(1)).as("true_n"),
@@ -1644,7 +1642,7 @@ object Analytics extends Family {
       Tables.nation(s, d).where(col("n_nationkey") < 20)
         .select(col("n_nationkey").cast("bigint").as("h"))
         .withColumn("p_milli",
-          expr("CAST(conv(substring(md5(concat('bh:', CAST(h AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000"))
+          expr(s"${md5Bits("bh", "h", 8)} % 1000"))
         .withColumn("rnk", row_number().over(w).cast("bigint"))
         .withColumn("step_ok", expr("2 * p_milli <= 5 * rnk"))
         .withColumn("k_star",
@@ -1728,7 +1726,7 @@ object Analytics extends Family {
       val xs = Tables.orders(s, d)
         .select(col("o_orderkey").as("i"),
           round(col("o_totalprice") * 100).cast("bigint").as("x"),
-          expr("CAST(conv(substring(md5(concat('hl:', CAST(o_orderkey AS STRING))), 1, 8), 16, 10) AS BIGINT)").as("h"))
+          expr(md5Bits("hl", "o_orderkey", 8)).as("h"))
         .orderBy("h", "i").limit(k)
         .select("i", "x")
         .localCheckpoint()
@@ -1795,12 +1793,10 @@ object Analytics extends Family {
     // observed diff times (n_Aj·n_Bj), DECIMAL(38,0) guarded — and
     // p = (1+#exceed)/(K+1) cleared to exact ppm.
     "agg_permutation_test" -> ((s, d) => {
-      def u(ns: String, idExpr: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', $idExpr)), 1, 8), 16, 10) AS BIGINT)"
       val base = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("arm", expr(s"${u("pa", "CAST(doc_id AS STRING)")} % 2"))
+        .withColumn("arm", expr(s"${md5Bits("concat('pa:', CAST(doc_id AS STRING))", 8)} % 2"))
         .withColumn("x", expr(
-          s"${u("pm", "CAST(doc_id AS STRING)")} % 1000 + arm * 150"))
+          s"${md5Bits("concat('pm:', CAST(doc_id AS STRING))", 8)} % 1000 + arm * 150"))
         .localCheckpoint()
       val obs = base.agg(
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_a"),
@@ -1810,7 +1806,7 @@ object Analytics extends Family {
         .withColumn("d_obs", expr("abs(s_a * n_b - s_b * n_a)"))
       val perms = base.crossJoin(broadcast(s.range(0, 64).select(col("id").as("perm"))))
         .withColumn("parm", expr(
-          s"${u("pp", "concat(CAST(perm AS STRING), ':', CAST(doc_id AS STRING))")} % 2"))
+          s"${md5Bits("concat('pp:', concat(CAST(perm AS STRING), ':', CAST(doc_id AS STRING)))", 8)} % 2"))
         .groupBy("perm")
         .agg(sum(when(col("parm") === 1, 1L).otherwise(0L)).as("n_aj"),
           sum(when(col("parm") === 1, col("x")).otherwise(0L)).as("s_aj"),
@@ -1838,11 +1834,9 @@ object Analytics extends Family {
     // exists anywhere — and the |MCC| > 0.5 verdict fully
     // cross-multiplied (4·num² > den).
     "agg_mcc" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"${u("mct")} % 2"))
-        .withColumn("pred", expr(s"IF(${u("mcf")} % 10 < 2, 1 - truth, truth)"))
+        .withColumn("truth", expr(s"${md5Bits("mct", "doc_id", 8)} % 2"))
+        .withColumn("pred", expr(s"IF(${md5Bits("mcf", "doc_id", 8)} % 10 < 2, 1 - truth, truth)"))
       t.agg(count(lit(1)).as("n"),
           sum(when(col("truth") === 1 && col("pred") === 1, 1L).otherwise(0L)).as("tp"),
           sum(when(col("truth") === 0 && col("pred") === 1, 1L).otherwise(0L)).as("fp"),
@@ -1870,12 +1864,10 @@ object Analytics extends Family {
     // no harmonic-mean floats), micro-F1 = accuracy (multiclass identity),
     // macro-F1 = truncated mean of the three class ppms.
     "agg_f1_multiclass" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"${u("f1t")} % 3"))
+        .withColumn("truth", expr(s"${md5Bits("f1t", "doc_id", 8)} % 3"))
         .withColumn("pred", expr(
-          s"IF(${u("f1f")} % 10 < 2, (truth + 1 + ${u("f1p")} % 2) % 3, truth)"))
+          s"IF(${md5Bits("f1f", "doc_id", 8)} % 10 < 2, (truth + 1 + ${md5Bits("f1p", "doc_id", 8)} % 2) % 3, truth)"))
       val per = (0 to 2).flatMap { c =>
         Seq(sum(when(col("truth") === c && col("pred") === c, 1L).otherwise(0L)).as(s"tp$c"),
           sum(when(col("truth") =!= c && col("pred") === c, 1L).otherwise(0L)).as(s"fp$c"),
@@ -1958,12 +1950,10 @@ object Analytics extends Family {
     // χ²>3.841 association verdict fully cross-multiplied with the
     // marginal product under DECIMAL(38,0) (exceeds int64 past ~50k).
     "agg_odds_ratio" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("exposed", expr(s"${u("ore")} % 2"))
+        .withColumn("exposed", expr(s"${md5Bits("ore", "doc_id", 8)} % 2"))
         .withColumn("outcome", expr(
-          s"IF(${u("oro")} % 100 < 30 + exposed * 15, 1, 0)"))
+          s"IF(${md5Bits("oro", "doc_id", 8)} % 100 < 30 + exposed * 15, 1, 0)"))
       t.agg(
           sum(when(col("exposed") === 1 && col("outcome") === 1, 1L).otherwise(0L)).as("a"),
           sum(when(col("exposed") === 1 && col("outcome") === 0, 1L).otherwise(0L)).as("b"),
@@ -1991,7 +1981,7 @@ object Analytics extends Family {
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("bigint").as("cents"),
-          expr("CAST(conv(substring(md5(concat('obv:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100 + 1").as("vol"))
+          expr(s"${md5Bits("obv", "event_id", 8)} % 100 + 1").as("vol"))
         .withColumn("delta", col("cents") - lag("cents", 1).over(ord))
         .withColumn("flow", expr(
           "CASE WHEN delta > 0 THEN vol WHEN delta < 0 THEN -vol ELSE CAST(0 AS BIGINT) END"))
@@ -2017,11 +2007,9 @@ object Analytics extends Family {
     // past ~9M rows), ONE integer DIV by n at the end. The calibrated
     // forecaster must win — graded as a boolean, not a float.
     "agg_brier_score" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("p_ppm", expr(s"(${u("brp")} % 1001) * 1000"))
-        .withColumn("y", expr(s"IF(${u("bry")} % 1000000 < p_ppm, 1, 0)"))
+        .withColumn("p_ppm", expr(s"(${md5Bits("brp", "doc_id", 8)} % 1001) * 1000"))
+        .withColumn("y", expr(s"IF(${md5Bits("bry", "doc_id", 8)} % 1000000 < p_ppm, 1, 0)"))
         .withColumn("q_ppm", expr(
           "IF(p_ppm >= 500000, (p_ppm + 1000000) DIV 2, p_ppm DIV 2)"))
         .agg(count(lit(1)).as("n"),
@@ -2045,11 +2033,9 @@ object Analytics extends Family {
     // in the comparison), winner picked deterministically (num desc,
     // thr asc) over the 19-row grid — the only window is grid-sized.
     "agg_youden_j" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"${u("yjt")} % 2"))
-        .withColumn("score", expr(s"${u("yjs")} % 700000 + truth * 300000"))
+        .withColumn("truth", expr(s"${md5Bits("yjt", "doc_id", 8)} % 2"))
+        .withColumn("score", expr(s"${md5Bits("yjs", "doc_id", 8)} % 700000 + truth * 300000"))
       val tot = t.agg(sum(col("truth")).as("p"),
         sum(expr("1 - truth")).as("nneg"))
       t.crossJoin(broadcast(s.range(1, 20).select((col("id") * 50000L).as("thr"))))
@@ -2084,11 +2070,9 @@ object Analytics extends Family {
     // tie-corrected variance: 6·10⁴·(W2−E2)² > 38416·var6 where
     // E2 = n(n+1)/2 and var6 = n(n+1)(2n+1) − Σ(t³−t)/2, both exact.
     "agg_wilcoxon_signed_rank" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("before", expr(s"${u("wsb")} % 1000"))
-        .withColumn("diff", expr(s"25 + ${u("wsn")} % 101 - 50"))
+        .withColumn("before", expr(s"${md5Bits("wsb", "doc_id", 8)} % 1000"))
+        .withColumn("diff", expr(s"25 + ${md5Bits("wsn", "doc_id", 8)} % 101 - 50"))
         .where(col("diff") =!= 0)
         .withColumn("adiff", abs(col("diff")))
       t.groupBy("adiff")
@@ -2121,13 +2105,11 @@ object Analytics extends Family {
     // scaling law: no division ever happens. One partitioned sort.
     "win_atr" -> ((s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("h", expr(s"cents + ${u("ath")} % 50"))
-        .withColumn("l", expr(s"cents - ${u("atl")} % 50"))
+        .withColumn("h", expr(s"cents + ${md5Bits("ath", "event_id", 8)} % 50"))
+        .withColumn("l", expr(s"cents - ${md5Bits("atl", "event_id", 8)} % 50"))
         .withColumn("pc", coalesce(lag("cents", 1).over(ord), col("cents")))
         .withColumn("tr", expr("greatest(h - l, abs(h - pc), abs(l - pc))"))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
@@ -2150,12 +2132,10 @@ object Analytics extends Family {
     // Monotonicity of the result follows from the minimax lattice
     // argument regardless of the ppm truncation.
     "agg_isotonic_pav" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val b = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("bin", expr(s"${u("ipb")} % 1000 DIV 50"))
+        .withColumn("bin", expr(s"${md5Bits("ipb", "doc_id", 8)} % 1000 DIV 50"))
         .withColumn("y", expr(
-          s"IF(${u("ipy")} % 1000 < 200 + bin * 40 - IF(bin = 7, 250, 0), 1, 0)"))
+          s"IF(${md5Bits("ipy", "doc_id", 8)} % 1000 < 200 + bin * 40 - IF(bin = 7, 250, 0), 1, 0)"))
         .groupBy("bin").agg(count(lit(1)).as("n"), sum("y").as("y"))
       // 20 bins: every window/join below is domain-bounded, never O(n)
       val w20 = Window.orderBy("bin")
@@ -2191,11 +2171,9 @@ object Analytics extends Family {
     // (two-sided 1.96) — DECIMAL(38,0) guarded (exceeds int64 past
     // ~10k rows). The planted truth: equivalent = true, naive = false.
     "agg_tost_equivalence" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("arm", expr(s"${u("tse")} % 2"))
-        .withColumn("conv", expr(s"IF(${u("tsc")} % 1000 < 300 + arm * 3, 1, 0)"))
+        .withColumn("arm", expr(s"${md5Bits("tse", "doc_id", 8)} % 2"))
+        .withColumn("conv", expr(s"IF(${md5Bits("tsc", "doc_id", 8)} % 1000 < 300 + arm * 3, 1, 0)"))
         .agg(sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"),
           sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n2"),
           sum(when(col("arm") === 1, col("conv")).otherwise(0L)).as("x1"),
@@ -2230,13 +2208,11 @@ object Analytics extends Family {
     // (inliers DESC, k ASC) over the 32-row candidate frame, slope
     // reported sign-safe milli (magnitude DIV, then negate).
     "agg_ransac_line" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val pts = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("x", expr(s"${u("rsx")} % 1000"))
+        .withColumn("x", expr(s"${md5Bits("rsx", "doc_id", 8)} % 1000"))
         .withColumn("y", expr(
-          s"""IF(${u("rso")} % 10 = 0, ${u("rsw")} % 3000,
-                3 * x + 50 + ${u("rsn")} % 41 - 20)"""))
+          s"""IF(${md5Bits("rso", "doc_id", 8)} % 10 = 0, ${md5Bits("rsw", "doc_id", 8)} % 3000,
+                3 * x + 50 + ${md5Bits("rsn", "doc_id", 8)} % 41 - 20)"""))
         .localCheckpoint()
       // fixed-size deterministic sample: the 64 smallest md5s, paired
       val cand = pts
@@ -2278,12 +2254,10 @@ object Analytics extends Family {
     // contract, the graph_resource_alloc law), and the χ² verdict
     // cleared to OE² > 3841600·V_micro under DECIMAL(38,0).
     "agg_logrank_test" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val subj = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("arm", expr(s"${u("lra")} % 2"))
-        .withColumn("t", expr(s"${u("lrt")} % 50 + 1 - arm * IF(${u("lrh")} % 10 < 4, 1, 0) * (${u("lrt")} % 50 DIV 2)"))
-        .withColumn("event", expr(s"IF(${u("lre")} % 10 < 7, 1, 0)"))
+        .withColumn("arm", expr(s"${md5Bits("lra", "doc_id", 8)} % 2"))
+        .withColumn("t", expr(s"${md5Bits("lrt", "doc_id", 8)} % 50 + 1 - arm * IF(${md5Bits("lrh", "doc_id", 8)} % 10 < 4, 1, 0) * (${md5Bits("lrt", "doc_id", 8)} % 50 DIV 2)"))
+        .withColumn("event", expr(s"IF(${md5Bits("lre", "doc_id", 8)} % 10 < 7, 1, 0)"))
       val byT = subj.groupBy("t")
         .agg(count(lit(1)).as("c"),
           sum(when(col("arm") === 1, 1L).otherwise(0L)).as("c1"),
@@ -2321,14 +2295,12 @@ object Analytics extends Family {
     // sort, sampled ledger rows.
     "win_adline" -> ((s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("h", expr(s"cents + ${u("adh")} % 50"))
-        .withColumn("l", expr(s"cents - ${u("adl")} % 50"))
-        .withColumn("vol", expr(s"${u("adv")} % 100 + 1"))
+        .withColumn("h", expr(s"cents + ${md5Bits("adh", "event_id", 8)} % 50"))
+        .withColumn("l", expr(s"cents - ${md5Bits("adl", "event_id", 8)} % 50"))
+        .withColumn("vol", expr(s"${md5Bits("adv", "event_id", 8)} % 100 + 1"))
         .withColumn("mfv_milli", expr(
           """CASE WHEN h = l THEN CAST(0 AS BIGINT)
              WHEN 2 * cents - h - l >= 0
@@ -2351,12 +2323,10 @@ object Analytics extends Family {
     // apply the SAME declared ÷10⁶ scale-down DIV before squaring
     // (scaled-integer truncation — deterministic by construction).
     "agg_partial_corr" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("z", expr(s"${u("pcz")} % 100"))
-        .withColumn("x", expr(s"z + ${u("pcx")} % 50"))
-        .withColumn("y", expr(s"z + ${u("pcy")} % 50"))
+        .withColumn("z", expr(s"${md5Bits("pcz", "doc_id", 8)} % 100"))
+        .withColumn("x", expr(s"z + ${md5Bits("pcx", "doc_id", 8)} % 50"))
+        .withColumn("y", expr(s"z + ${md5Bits("pcy", "doc_id", 8)} % 50"))
         .agg(count(lit(1)).as("n"),
           sum("x").as("sx"), sum("y").as("sy"), sum("z").as("sz"),
           sum(expr("x * x")).as("sxx"), sum(expr("y * y")).as("syy"),
@@ -2401,12 +2371,10 @@ object Analytics extends Family {
     // variance sums — one sign-safe DIV to ppm — and the α > 0.7
     // publishing bar fully cross-multiplied.
     "agg_cronbach_alpha" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = (1 to 4).foldLeft(
         Tables.documents(s, d).select(col("doc_id"))
-          .withColumn("tt", expr(s"${u("cat")} % 100"))) { (df, j) =>
-        df.withColumn(s"i$j", expr(s"tt + ${u("ca" + j)} % 50"))
+          .withColumn("tt", expr(s"${md5Bits("cat", "doc_id", 8)} % 100"))) { (df, j) =>
+        df.withColumn(s"i$j", expr(s"tt + ${md5Bits("ca" + j, "doc_id", 8)} % 50"))
       }.withColumn("tot", expr("i1 + i2 + i3 + i4"))
       t.agg(count(lit(1)).as("n"),
           sum("i1").as("s1"), sum(expr("i1 * i1")).as("q1"),
@@ -2435,12 +2403,10 @@ object Analytics extends Family {
     // (Σx)² — no mean ever materializes), leverage reported in ppm with
     // the two declared DIV truncations. One broadcast scalar attach.
     "agg_regression_influence" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val pts = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("x", expr(
-          s"IF(doc_id < 5, 5000 + doc_id * 100, ${u("rix")} % 1000)"))
-        .withColumn("y", expr(s"2 * x + 100 + ${u("rin")} % 101 - 50"))
+          s"IF(doc_id < 5, 5000 + doc_id * 100, ${md5Bits("rix", "doc_id", 8)} % 1000)"))
+        .withColumn("y", expr(s"2 * x + 100 + ${md5Bits("rin", "doc_id", 8)} % 101 - 50"))
       val tot = pts.agg(count(lit(1)).as("n"),
         sum("x").as("sx"), sum(expr("x * x")).as("sx2"))
         .withColumn("cxx", expr("n * sx2 - sx * sx"))
@@ -2464,7 +2430,7 @@ object Analytics extends Family {
     "agg_pinball_loss" -> ((s, d) => {
       Tables.events(s, d)
         .select(col("event_type"),
-          expr("CAST(conv(substring(md5(concat('pb:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000").as("a"))
+          expr(s"${md5Bits("pb", "event_id", 8)} % 1000").as("a"))
         .withColumn("la_x10", expr("IF(a >= 900, 9 * (a - 900), 900 - a)"))
         .withColumn("lb_x10", expr("IF(a >= 500, 9 * (a - 500), 500 - a)"))
         .groupBy("event_type")
@@ -2488,7 +2454,7 @@ object Analytics extends Family {
         val w = Window.partitionBy("event_type").orderBy(col(ordCol), col("event_id"))
         Tables.events(s, d)
           .select(col("event_type"), col("event_id"), col("ts_us"),
-            expr("CAST(conv(substring(md5(concat('dwk:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)").as("hk"))
+            expr(md5Bits("dwk", "event_id", 8)).as("hk"))
           .withColumn("rn", row_number().over(
             Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))).cast("bigint"))
           .withColumn("x", expr("5 * abs(rn % 200 - 100) + hk % 20"))
@@ -2516,13 +2482,11 @@ object Analytics extends Family {
     // integers (the 6N / 9N² denominators cancel into the single
     // rational).
     "agg_fleiss_kappa" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"${u("fkt")} % 3"))
+        .withColumn("truth", expr(s"${md5Bits("fkt", "doc_id", 8)} % 3"))
       val rated = (1 to 3).foldLeft(t) { (df, r) =>
         df.withColumn(s"r$r", expr(
-          s"IF(${u("fkf" + r)} % 10 < 8, truth, (truth + 1 + ${u("fko" + r)} % 2) % 3)"))
+          s"IF(${md5Bits("fkf" + r, "doc_id", 8)} % 10 < 8, truth, (truth + 1 + ${md5Bits("fko" + r, "doc_id", 8)} % 2) % 3)"))
       }
       val counted = (0 to 2).foldLeft(rated) { (df, c) =>
         df.withColumn(s"n$c", expr(
@@ -2555,8 +2519,7 @@ object Analytics extends Family {
       val judges = broadcast(s.range(0, 4).select(col("id").as("judge")))
       val scored = items.crossJoin(judges)
         .withColumn("score", expr(
-          """CAST(conv(substring(md5(concat('kw:', CAST(judge AS STRING), ':',
-             CAST(item AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000 + item * 400"""))
+          s"${md5Bits("concat('kw:', CAST(judge AS STRING), ':', CAST(item AS STRING))", 8)} % 1000 + item * 400"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("judge").orderBy(col("score"), col("item"))).cast("bigint"))
       scored.groupBy("item").agg(sum("rk").as("r_sum"))
@@ -2576,12 +2539,10 @@ object Analytics extends Family {
     // cross-multiplied per-row test (n·dᵢ − Sd)²·10⁴ > 38416·(nΣd²−Sd²)
     // — population variance, no sqrt, no float.
     "agg_bland_altman" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("diff", expr(
-          s"""20 + IF(${u("bao")} % 10 = 0,
-                ${u("ban")} % 181 - 90, ${u("ban")} % 61 - 30)"""))
+          s"""20 + IF(${md5Bits("bao", "doc_id", 8)} % 10 = 0,
+                ${md5Bits("ban", "doc_id", 8)} % 181 - 90, ${md5Bits("ban", "doc_id", 8)} % 61 - 30)"""))
       val tot = t.agg(count(lit(1)).as("n"), sum("diff").as("sd"),
         sum(expr("diff * diff")).as("sd2"))
       t.crossJoin(broadcast(tot)) // single-row scalar attach
@@ -2607,16 +2568,14 @@ object Analytics extends Family {
     // is by VALUE, so no global sort exists to bottleneck at scale).
     // Analytic: λ_dep ≈ P(noise > 50) ≈ 0.49; λ_ind ≈ 0.09·0.49 ≈ 0.04.
     "agg_tail_dependence" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("z", expr(s"${u("tdz")} % 100"))
-        .withColumn("x", expr(s"IF(z > 90, 100, 0) + ${u("tdx")} % 100"))
-        .withColumn("y", expr(s"IF(z > 90, 100, 0) + ${u("tdy")} % 100"))
+        .withColumn("z", expr(s"${md5Bits("tdz", "doc_id", 8)} % 100"))
+        .withColumn("x", expr(s"IF(z > 90, 100, 0) + ${md5Bits("tdx", "doc_id", 8)} % 100"))
+        .withColumn("y", expr(s"IF(z > 90, 100, 0) + ${md5Bits("tdy", "doc_id", 8)} % 100"))
         .withColumn("x2", expr(
-          s"IF(${u("tdu")} % 100 > 90, 100, 0) + ${u("tdv")} % 100"))
+          s"IF(${md5Bits("tdu", "doc_id", 8)} % 100 > 90, 100, 0) + ${md5Bits("tdv", "doc_id", 8)} % 100"))
         .withColumn("y2", expr(
-          s"IF(${u("tdw")} % 100 > 90, 100, 0) + ${u("tdq")} % 100"))
+          s"IF(${md5Bits("tdw", "doc_id", 8)} % 100 > 90, 100, 0) + ${md5Bits("tdq", "doc_id", 8)} % 100"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("x") > 150, 1L).otherwise(0L)).as("nx"),
           sum(when(col("x") > 150 && col("y") > 150, 1L).otherwise(0L)).as("nxy"),
@@ -2637,13 +2596,11 @@ object Analytics extends Family {
     // clearing makes the mean-shift term (Sx−Sy)², no mean ever
     // materializes), sign-safe DIV to ppm; the shift must cost CCC.
     "agg_lin_ccc" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       def pair(shift: Int, label: String) =
         Tables.documents(s, d).select(col("doc_id"))
-          .withColumn("z", expr(s"${u("lcz")} % 100"))
-          .withColumn("x", expr(s"z + ${u("lcx")} % 30"))
-          .withColumn("y", expr(s"z + ${u("lcy")} % 30 + $shift"))
+          .withColumn("z", expr(s"${md5Bits("lcz", "doc_id", 8)} % 100"))
+          .withColumn("x", expr(s"z + ${md5Bits("lcx", "doc_id", 8)} % 30"))
+          .withColumn("y", expr(s"z + ${md5Bits("lcy", "doc_id", 8)} % 30 + $shift"))
           .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
             sum(expr("x * x")).as("sxx"), sum(expr("y * y")).as("syy"),
             sum(expr("x * y")).as("sxy"))
@@ -2700,12 +2657,10 @@ object Analytics extends Family {
     // truncation declared, 5 strata), ATE = the n_z-weighted average in
     // one more DIV; truth +30 recovered, naive bias flagged.
     "agg_stratified_ate" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("z", expr(s"${u("saz")} % 5"))
-        .withColumn("t", expr(s"IF(${u("sat")} % 100 < 20 + 15 * z, 1, 0)"))
-        .withColumn("y", expr(s"100 + 30 * t + 20 * z + ${u("say")} % 21 - 10"))
+        .withColumn("z", expr(s"${md5Bits("saz", "doc_id", 8)} % 5"))
+        .withColumn("t", expr(s"IF(${md5Bits("sat", "doc_id", 8)} % 100 < 20 + 15 * z, 1, 0)"))
+        .withColumn("y", expr(s"100 + 30 * t + 20 * z + ${md5Bits("say", "doc_id", 8)} % 21 - 10"))
       val strata = t.groupBy("z")
         .agg(count(lit(1)).as("nz"),
           sum(col("t")).as("n1"),
@@ -2740,12 +2695,10 @@ object Analytics extends Family {
     // DECIMAL(38,0), reported in e12 units; shift must dominate the
     // null by an order of magnitude. Two groupBys, one 10-row join.
     "agg_mmd_buckets" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("half", expr("doc_id % 2"))
-        .withColumn("base", expr(s"${u("mmb")} % 10"))
-        .withColumn("shifted", expr(s"IF(${u("mms")} % 10 < 4, 0, base)"))
+        .withColumn("base", expr(s"${md5Bits("mmb", "doc_id", 8)} % 10"))
+        .withColumn("shifted", expr(s"IF(${md5Bits("mms", "doc_id", 8)} % 10 < 4, 0, base)"))
       def mmd(colA: String, whereA: String, colB: String, whereB: String) = {
         val a = t.where(expr(whereA)).groupBy(expr(colA).as("b"))
           .agg(count(lit(1)).as("ca"))
@@ -2781,14 +2734,12 @@ object Analytics extends Family {
     // of the exact side test n·x > Sx. One scalar attach, one
     // partitioned sort; flagged-point ledger per type.
     "win_spc_rules" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val base = Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"))
         .withColumn("rn0", row_number().over(
           Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))).cast("bigint"))
         .withColumn("x", expr(
-          s"""500 + ${u("spn")} % 41 - 20
+          s"""500 + ${md5Bits("spn", "event_id", 8)} % 41 - 20
               + IF(event_id % 97 = 0, 150, 0)
               + IF(rn0 % 250 < 12, 40, 0)"""))
       val tot = base.groupBy("event_type")
@@ -2814,13 +2765,11 @@ object Analytics extends Family {
     // = 14·close < stop×14. One partitioned sort, two rows-frames.
     "win_chandelier_exit" -> ((s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("h", expr(s"cents + ${u("ceh")} % 50"))
-        .withColumn("l", expr(s"cents - ${u("cel")} % 50"))
+        .withColumn("h", expr(s"cents + ${md5Bits("ceh", "event_id", 8)} % 50"))
+        .withColumn("l", expr(s"cents - ${md5Bits("cel", "event_id", 8)} % 50"))
         .withColumn("pc", coalesce(lag("cents", 1).over(ord), col("cents")))
         .withColumn("tr", expr("greatest(h - l, abs(h - pc), abs(l - pc))"))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
@@ -2904,7 +2853,7 @@ object Analytics extends Family {
     "agg_kaplan_meier" -> ((s, d) => {
       val lab = Tables.events(s, d).select("user_id").distinct()
         .withColumn("dur_raw", expr(
-          "CAST(conv(substring(md5(concat('km:', CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("km", "user_id", 8)} % 100"))
         .select((col("user_id") % 3).as("cohort"),
           least(col("dur_raw"), lit(60L)).as("dur"),
           when(col("dur_raw") <= 60, 1L).otherwise(0L).as("ev"))
@@ -3223,7 +3172,7 @@ object Analytics extends Family {
     // cross-multiplies to 1000·num > 5991·den. One scan, one aggregate.
     "agg_cochran_q" -> ((s, d) => {
       def x(j: Int) =
-        s"(CASE WHEN CAST(conv(substring(md5(concat('cq$j:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 5 < ${j + 1} THEN 1 ELSE 0 END)"
+        s"(CASE WHEN ${md5Bits(s"cq$j", "doc_id", 8)} % 5 < ${j + 1} THEN 1 ELSE 0 END)"
       Tables.documents(s, d).select(col("doc_id"))
         .withColumn("x0", expr(x(0)).cast("long"))
         .withColumn("x1", expr(x(1)).cast("long"))
@@ -3337,7 +3286,7 @@ object Analytics extends Family {
     // +80/treatment shift is exactly the monotone alternative L exists for.
     "agg_page_trend" -> ((s, d) => {
       def sc(j: Int) =
-        s"(CAST(conv(substring(md5(concat('pg$j:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000 + ${j * 80})"
+        s"(${md5Bits(s"pg$j", "doc_id", 8)} % 1000 + ${j * 80})"
       def rank(j: Int) = {
         val others = (0 to 2).filter(_ != j).map { i =>
           s"(CASE WHEN ${sc(i)} < ${sc(j)} OR (${sc(i)} = ${sc(j)} AND $i < $j) THEN 1 ELSE 0 END)"
@@ -3389,12 +3338,10 @@ object Analytics extends Family {
     // drift, and a trial double version DID drift 1 ulp cross-engine via
     // FMA contraction); nDCG = dcg·10⁶ DIV idcg exact.
     "llm_ndcg" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("qid", expr("doc_id DIV 20"))
-        .withColumn("rel", expr(s"${u("rel")} % 4"))
-        .withColumn("score", expr(s"${u("sc")} % 10000"))
+        .withColumn("rel", expr(s"${md5Bits("rel", "doc_id", 8)} % 4"))
+        .withColumn("score", expr(s"${md5Bits("sc", "doc_id", 8)} % 10000"))
       val wRank = Window.partitionBy("qid")
         .orderBy(col("score").desc, col("doc_id"))
       val wIdeal = Window.partitionBy("qid")
@@ -3559,7 +3506,7 @@ object Analytics extends Family {
     "agg_sprt" -> ((s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("success", expr(
-          "CASE WHEN CAST(conv(substring(md5(concat('sprt:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10 < 6 THEN 1 ELSE 0 END"))
+          s"CASE WHEN ${md5Bits("sprt", "doc_id", 8)} % 10 < 6 THEN 1 ELSE 0 END"))
         .withColumn("llr_step", expr(
           "CAST(CASE WHEN success = 1 THEN 182322 ELSE -223144 END AS BIGINT)"))
         .withColumn("bkt", expr("doc_id DIV 1048576"))
@@ -3642,8 +3589,6 @@ object Analytics extends Family {
     // shift/mask expression, and 4 base32 chars picked by substring into
     // the standard alphabet literal — every step integer or table lookup.
     "fn_geohash" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val z = (0 to 9).map { i =>
         s"(shiftleft((lonq >> ${9 - i}) & 1, ${19 - 2 * i}) + shiftleft((latq >> ${9 - i}) & 1, ${18 - 2 * i}))"
       }.mkString(" + ")
@@ -3652,8 +3597,8 @@ object Analytics extends Family {
       }.mkString(", ")
       Tables.events(s, d).select(col("event_id"))
         .where(col("event_id") % 20 === 6)
-        .withColumn("lat_micro", expr(s"${u("lat")} % 180000001 - 90000000"))
-        .withColumn("lon_micro", expr(s"${u("lon")} % 360000001 - 180000000"))
+        .withColumn("lat_micro", expr(s"${md5Bits("lat", "event_id", 8)} % 180000001 - 90000000"))
+        .withColumn("lon_micro", expr(s"${md5Bits("lon", "event_id", 8)} % 360000001 - 180000000"))
         .withColumn("latq", expr("(lat_micro + 90000000) * 1024 DIV 180000001"))
         .withColumn("lonq", expr("(lon_micro + 180000000) * 1024 DIV 360000001"))
         .withColumn("z", expr(s"CAST($z AS BIGINT)"))
@@ -3719,7 +3664,7 @@ object Analytics extends Family {
         .select(col("event_id"),
           floor(col("value") * 100).cast("bigint").as("c0"))
         .withColumn("arm", expr(
-          "CAST(conv(substring(md5(concat('cd:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2"))
+          s"${md5Bits("cd", "event_id", 8)} % 2"))
         .withColumn("x", expr("c0 + arm * 3000"))
         .agg(
           sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n0"),
@@ -3785,13 +3730,11 @@ object Analytics extends Family {
     // point. The cell key bounds the pair blow-up exactly the way a
     // 100 TB spatial index would.
     "join_nearest_spatial" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val pts = Tables.events(s, d)
         .where(col("event_id") % 10 === 2)
         .select(col("event_id"))
-        .withColumn("x", expr(s"${u("px")} % 1000000"))
-        .withColumn("y", expr(s"${u("py")} % 1000000"))
+        .withColumn("x", expr(s"${md5Bits("px", "event_id", 8)} % 1000000"))
+        .withColumn("y", expr(s"${md5Bits("py", "event_id", 8)} % 1000000"))
         .withColumn("cell", expr("(x DIV 50000) * 100 + y DIV 50000"))
         .withColumnRenamed("event_id", "pid")
       val a = pts.select(col("pid").as("a_id"), col("x").as("ax"),
@@ -3841,7 +3784,7 @@ object Analytics extends Family {
       Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("ip", expr(
-          "CAST(conv(substring(md5(concat('ip:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 4294967296"))
+          s"${md5Bits("ip", "event_id", 8)} % 4294967296"))
         .withColumn("block", expr(
           """CASE WHEN ip >> 24 = 10 THEN '10.0.0.0/8'
              WHEN ip >> 20 = 2753 THEN '172.16.0.0/12'
@@ -3863,12 +3806,10 @@ object Analytics extends Family {
     // accuracy in exact ppm, and the uniformity χ² = (4Σc²−N²)/N kept as
     // an integer rational with the df=3 flag cross-multiplied.
     "llm_mcq_position_bias" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"${u("mcqt")} % 4"))
+        .withColumn("truth", expr(s"${md5Bits("mcqt", "doc_id", 8)} % 4"))
         .withColumn("pred", expr(
-          s"CASE WHEN ${u("mcqb")} % 10 < 4 THEN CAST(0 AS BIGINT) ELSE ${u("mcqp")} % 4 END"))
+          s"CASE WHEN ${md5Bits("mcqb", "doc_id", 8)} % 10 < 4 THEN CAST(0 AS BIGINT) ELSE ${md5Bits("mcqp", "doc_id", 8)} % 4 END"))
       val slots = (0 to 3).flatMap { j =>
         Seq(sum(when(col("pred") === j, 1L).otherwise(0L)).as(s"c$j"),
           sum(when(col("pred") === j && col("truth") === j, 1L).otherwise(0L)).as(s"hit$j"))
@@ -3921,12 +3862,10 @@ object Analytics extends Family {
     // the ledger reports picked/oracle/first-sample quality plus the
     // win rate over the baseline — regret included, exact integers only.
     "llm_best_of_n" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("grp", expr("doc_id DIV 10"))
-        .withColumn("q", expr(s"${u("bq")} % 1000"))
-        .withColumn("score", expr(s"q + ${u("be")} % 400 - 200"))
+        .withColumn("q", expr(s"${md5Bits("bq", "doc_id", 8)} % 1000"))
+        .withColumn("score", expr(s"q + ${md5Bits("be", "doc_id", 8)} % 400 - 200"))
       val w = Window.partitionBy("grp")
         .orderBy(col("score").desc, col("doc_id"))
       val g = t.withColumn("rn", row_number().over(w))
@@ -3956,16 +3895,14 @@ object Analytics extends Family {
     // grades majority accuracy AGAINST single-sample accuracy — the gain
     // is the whole point and it is exact-integer end to end.
     "llm_self_consistency" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       def samp(i: Int) =
-        s"(CASE WHEN ${u(s"scs$i")} % 10 < 4 THEN truth ELSE ${u(s"scr$i")} % 4 END)"
+        s"(CASE WHEN ${md5Bits(s"scs$i", "doc_id", 8)} % 10 < 4 THEN truth ELSE ${md5Bits(s"scr$i", "doc_id", 8)} % 4 END)"
       val votes = (0 to 3).map { a =>
         val terms = (1 to 5).map(i => s"(CASE WHEN s$i = $a THEN 1 ELSE 0 END)").mkString(" + ")
         (s"v$a", s"CAST($terms AS BIGINT)")
       }
       var t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"${u("sct")} % 4"))
+        .withColumn("truth", expr(s"${md5Bits("sct", "doc_id", 8)} % 4"))
       (1 to 5).foreach { i => t = t.withColumn(s"s$i", expr(samp(i))) }
       votes.foreach { case (name, ex) => t = t.withColumn(name, expr(ex)) }
       t.withColumn("maj", expr(
@@ -4017,11 +3954,9 @@ object Analytics extends Family {
     // bands) — band offsets + per-band partitioned row_number, no global
     // sort at any scale.
     "llm_membership_inference" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("member", expr(s"${u("mem")} % 2"))
-        .withColumn("loss_milli", expr(s"2000 + ${u("ln")} % 1000 - member * 300"))
+        .withColumn("member", expr(s"${md5Bits("mem", "doc_id", 8)} % 2"))
+        .withColumn("loss_milli", expr(s"2000 + ${md5Bits("ln", "doc_id", 8)} % 1000 - member * 300"))
         .withColumn("bkt", expr("loss_milli DIV 100"))
       val off = t.groupBy("bkt").agg(count(lit(1)).as("bc"))
         .withColumn("off", coalesce(sum("bc").over(
@@ -4098,7 +4033,7 @@ object Analytics extends Family {
         .select(col("doc_id"))
         .withColumn("shard", expr("doc_id % 64"))
         .withColumn("g", expr(
-          "1000 + CAST(conv(substring(md5(concat('gns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 400 - 200"))
+          s"1000 + ${md5Bits("gns", "doc_id", 8)} % 400 - 200"))
         .groupBy("shard").agg(sum("g").as("gs"))
         .agg(count(lit(1)).as("n"),
           sum("gs").as("s1"),
@@ -4134,13 +4069,11 @@ object Analytics extends Family {
     // the distribution rollup proves the cascade partitions (every pair
     // classifies exactly once — graded by count conservation).
     "fn_allen_intervals" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.events(s, d).select(col("event_id"))
-        .withColumn("a1", expr(s"${u("ia")} % 1000"))
-        .withColumn("a2", expr(s"a1 + ${u("il")} % 100 + 1"))
-        .withColumn("b1", expr(s"${u("ib")} % 1000"))
-        .withColumn("b2", expr(s"b1 + ${u("im")} % 100 + 1"))
+        .withColumn("a1", expr(s"${md5Bits("ia", "event_id", 8)} % 1000"))
+        .withColumn("a2", expr(s"a1 + ${md5Bits("il", "event_id", 8)} % 100 + 1"))
+        .withColumn("b1", expr(s"${md5Bits("ib", "event_id", 8)} % 1000"))
+        .withColumn("b2", expr(s"b1 + ${md5Bits("im", "event_id", 8)} % 100 + 1"))
         .withColumn("rel", expr(
           """CASE
              WHEN a2 < b1 THEN 'precedes'
@@ -4227,7 +4160,7 @@ object Analytics extends Family {
     "agg_beta_binomial" -> ((s, d) => {
       Tables.documents(s, d).select(col("doc_id"))
         .withColumn("hit", expr(
-          "CASE WHEN CAST(conv(substring(md5(concat('bb:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10 < 3 THEN 1 ELSE 0 END"))
+          s"CASE WHEN ${md5Bits("bb", "doc_id", 8)} % 10 < 3 THEN 1 ELSE 0 END"))
         .agg(count(lit(1)).as("n"), sum("hit").cast("long").as("k"))
         .withColumn("alpha_post", expr("2 + k"))
         .withColumn("beta_post", expr("8 + n - k"))
@@ -4812,11 +4745,11 @@ object Analytics extends Family {
 
     // Same hash-uniform draw, same published Poisson(1) thresholds.
     "agg_poisson_bootstrap" ->
-      """WITH o AS (SELECT o_orderkey,
+      s"""WITH o AS (SELECT o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS cents
         |  FROM orders),
         |r AS (SELECT o_orderkey, cents, b,
-        |    ('0x' || substring(md5(CAST(o_orderkey AS VARCHAR) || ':' || CAST(b AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS v
+        |    ${duckMd5Bits("CAST(o_orderkey AS VARCHAR) || ':' || CAST(b AS VARCHAR)", 8)} % 1000000 AS v
         |  FROM o, (SELECT unnest(range(0, 20)) AS b)),
         |w AS (SELECT CAST(b AS BIGINT) AS replica, cents,
         |    CAST(CASE WHEN v < 367879 THEN 0 WHEN v < 735758 THEN 1
@@ -5045,8 +4978,8 @@ object Analytics extends Family {
 
     // Same md5 split, same lossless-double statistic, same integer alarm.
     "agg_ab_srm" ->
-      """WITH a AS (SELECT
-        |    ('0x' || substring(md5('srm:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 2 AS arm
+      s"""WITH a AS (SELECT
+        |    ${duckMd5Bits("srm", "o_orderkey", 8)} % 2 AS arm
         |  FROM orders),
         |c AS (SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
         |    CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1
@@ -5257,7 +5190,7 @@ object Analytics extends Family {
     // Same comparison-counted ranks, same integer rational chi-square.
     "agg_friedman" -> {
       def sc(j: Int) =
-        s"(('0x' || substring(md5('t$j:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 + ${j * 25})"
+        s"(${duckMd5Bits(s"t$j", "doc_id", 8)} % 1000 + ${j * 25})"
       def rank(j: Int) = {
         val others = (0 to 2).filter(_ != j).map { i =>
           s"(CASE WHEN ${sc(i)} < ${sc(j)} OR (${sc(i)} = ${sc(j)} AND $i < $j) THEN 1 ELSE 0 END)"
@@ -5296,11 +5229,11 @@ object Analytics extends Family {
 
     // Same rater construction, same exact integer rational.
     "agg_cohens_kappa" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('k1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 AS r1,
-        |    CASE WHEN ('0x' || substring(md5('k2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4 = 0
-        |      THEN ('0x' || substring(md5('k3:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3
-        |      ELSE ('0x' || substring(md5('k1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 END AS r2
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("k1", "doc_id", 8)} % 3 AS r1,
+        |    CASE WHEN ${duckMd5Bits("k2", "doc_id", 8)} % 4 = 0
+        |      THEN ${duckMd5Bits("k3", "doc_id", 8)} % 3
+        |      ELSE ${duckMd5Bits("k1", "doc_id", 8)} % 3 END AS r2
         |  FROM documents),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CASE WHEN r1 = r2 THEN 1 ELSE 0 END) AS BIGINT) AS agree,
@@ -5344,9 +5277,9 @@ object Analytics extends Family {
 
     // Same two verdict streams, same all-integer cross-multiplied test.
     "agg_mcnemar" ->
-      """WITH t AS (SELECT
-        |    ('0x' || substring(md5('ma:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 6 AS a_ok,
-        |    ('0x' || substring(md5('mb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 5 AS b_ok
+      s"""WITH t AS (SELECT
+        |    ${duckMd5Bits("ma", "doc_id", 8)} % 10 < 6 AS a_ok,
+        |    ${duckMd5Bits("mb", "doc_id", 8)} % 10 < 5 AS b_ok
         |  FROM documents),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CASE WHEN a_ok AND NOT b_ok THEN 1 ELSE 0 END) AS BIGINT) AS b_disc,
@@ -5361,9 +5294,9 @@ object Analytics extends Family {
 
     // Same two md5 coins, same integer estimator, same sign-safe error.
     "agg_capture_recapture" ->
-      """WITH t AS (SELECT
-        |    ('0x' || substring(md5('cap_a:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 4 = 0 AS a,
-        |    ('0x' || substring(md5('cap_b:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 4 = 0 AS b
+      s"""WITH t AS (SELECT
+        |    ${duckMd5Bits("cap_a", "c_custkey", 8)} % 4 = 0 AS a,
+        |    ${duckMd5Bits("cap_b", "c_custkey", 8)} % 4 = 0 AS b
         |  FROM customer),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS true_n,
         |    CAST(SUM(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -5422,8 +5355,8 @@ object Analytics extends Family {
 
     // Same md5 p-values, same integer step-up condition.
     "agg_benjamini_hochberg" ->
-      """WITH t AS (SELECT CAST(n_nationkey AS BIGINT) AS h,
-        |    ('0x' || substring(md5('bh:' || CAST(n_nationkey AS VARCHAR)), 1, 8))::BIGINT % 1000
+      s"""WITH t AS (SELECT CAST(n_nationkey AS BIGINT) AS h,
+        |    ${duckMd5Bits("bh", "n_nationkey", 8)} % 1000
         |      AS p_milli
         |  FROM nation WHERE n_nationkey < 20),
         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY p_milli, h) AS BIGINT) AS rnk
@@ -5483,9 +5416,9 @@ object Analytics extends Family {
     // lower-median pick (the oracle may row_number; only the ENGINE must
     // be window-free).
     "agg_hodges_lehmann" ->
-      """WITH s AS (SELECT o_orderkey AS i,
+      s"""WITH s AS (SELECT o_orderkey AS i,
         |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS x,
-        |    ('0x' || substring(md5('hl:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS h
+        |    ${duckMd5Bits("hl", "o_orderkey", 8)} AS h
         |  FROM orders),
         |xs AS (SELECT i, x FROM s ORDER BY h, i LIMIT 512),
         |p AS (SELECT a.i AS i, b.i AS j, a.x + b.x AS s2
@@ -5606,7 +5539,7 @@ object Analytics extends Family {
     // Same md5 successes, same Cauchy–Schwarz-non-negative rational.
     "agg_cochran_q" -> {
       def x(j: Int) =
-        s"(CASE WHEN ('0x' || substring(md5('cq$j:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 5 < ${j + 1} THEN 1 ELSE 0 END)"
+        s"(CASE WHEN ${duckMd5Bits(s"cq$j", "doc_id", 8)} % 5 < ${j + 1} THEN 1 ELSE 0 END)"
       s"""WITH t AS (SELECT doc_id,
          |    CAST(${x(0)} AS BIGINT) AS x0,
          |    CAST(${x(1)} AS BIGINT) AS x1,
@@ -5707,7 +5640,7 @@ object Analytics extends Family {
     // Same comparison-counted ranks, same closed-form directional z².
     "agg_page_trend" -> {
       def sc(j: Int) =
-        s"(('0x' || substring(md5('pg$j:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 + ${j * 80})"
+        s"(${duckMd5Bits(s"pg$j", "doc_id", 8)} % 1000 + ${j * 80})"
       def rank(j: Int) = {
         val others = (0 to 2).filter(_ != j).map { i =>
           s"(CASE WHEN ${sc(i)} < ${sc(j)} OR (${sc(i)} = ${sc(j)} AND $i < $j) THEN 1 ELSE 0 END)"
@@ -5756,8 +5689,8 @@ object Analytics extends Family {
            |  + COALESCE(${p}3, 0) * 500000 + COALESCE(${p}4, 0) * 430677
            |  + COALESCE(${p}5, 0) * 386853 AS BIGINT)""".stripMargin
       s"""WITH t AS (SELECT doc_id, doc_id // 20 AS qid,
-         |    ('0x' || substring(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4 AS rel,
-         |    ('0x' || substring(md5('sc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 AS score
+         |    ${duckMd5Bits("rel", "doc_id", 8)} % 4 AS rel,
+         |    ${duckMd5Bits("sc", "doc_id", 8)} % 10000 AS score
          |  FROM documents),
          |r AS (SELECT qid, rel,
          |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rn,
@@ -5873,8 +5806,8 @@ object Analytics extends Family {
 
     // Same micro-nat integer walk, same conditional-MIN first crossing.
     "agg_sprt" ->
-      """WITH t AS (SELECT doc_id,
-        |    CASE WHEN ('0x' || substring(md5('sprt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 6
+      s"""WITH t AS (SELECT doc_id,
+        |    CASE WHEN ${duckMd5Bits("sprt", "doc_id", 8)} % 10 < 6
         |      THEN 1 ELSE 0 END AS success
         |  FROM documents),
         |w AS (SELECT doc_id, success,
@@ -5936,8 +5869,8 @@ object Analytics extends Family {
         s"substring('0123456789bcdefghjkmnpqrstuvwxyz', CAST(((z >> ${15 - 5 * k}) & 31) + 1 AS INT), 1)"
       }.mkString(" || ")
       s"""WITH e AS (SELECT event_id,
-         |    ('0x' || substring(md5('lat:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 180000001 - 90000000 AS lat_micro,
-         |    ('0x' || substring(md5('lon:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 360000001 - 180000000 AS lon_micro
+         |    ${duckMd5Bits("lat", "event_id", 8)} % 180000001 - 90000000 AS lat_micro,
+         |    ${duckMd5Bits("lon", "event_id", 8)} % 360000001 - 180000000 AS lon_micro
          |  FROM events WHERE event_id % 20 = 6),
          |q AS (SELECT event_id, lat_micro, lon_micro,
          |    (lat_micro + 90000000) * 1024 // 180000001 AS latq,
@@ -5979,9 +5912,9 @@ object Analytics extends Family {
 
     // Same md5 arms, same single cleared HUGEINT rational.
     "agg_cohens_d" ->
-      """WITH t AS (SELECT event_id,
+      s"""WITH t AS (SELECT event_id,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS c0,
-        |    ('0x' || substring(md5('cd:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS arm
+        |    ${duckMd5Bits("cd", "event_id", 8)} % 2 AS arm
         |  FROM events),
         |x AS (SELECT arm, c0 + arm * 3000 AS x FROM t),
         |m AS (SELECT
@@ -6041,9 +5974,9 @@ object Analytics extends Family {
 
     // Same grid blocking, same exact squared-distance argmin.
     "join_nearest_spatial" ->
-      """WITH p AS (SELECT event_id AS pid,
-        |    ('0x' || substring(md5('px:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS x,
-        |    ('0x' || substring(md5('py:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 AS y
+      s"""WITH p AS (SELECT event_id AS pid,
+        |    ${duckMd5Bits("px", "event_id", 8)} % 1000000 AS x,
+        |    ${duckMd5Bits("py", "event_id", 8)} % 1000000 AS y
         |  FROM events WHERE event_id % 10 = 2),
         |c AS (SELECT pid, x, y, (x // 50000) * 100 + y // 50000 AS cell FROM p),
         |j AS (SELECT a.pid AS a_id, b.pid AS b_id, a.cell,
@@ -6074,8 +6007,8 @@ object Analytics extends Family {
 
     // Same shift-compare containment, same DIV/mod dotted rendering.
     "fn_ipv4_cidr" ->
-      """WITH i AS (SELECT event_id,
-        |    ('0x' || substring(md5('ip:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 4294967296 AS ip
+      s"""WITH i AS (SELECT event_id,
+        |    ${duckMd5Bits("ip", "event_id", 8)} % 4294967296 AS ip
         |  FROM events),
         |c AS (SELECT ip,
         |    CASE WHEN ip >> 24 = 10 THEN '10.0.0.0/8'
@@ -6092,11 +6025,11 @@ object Analytics extends Family {
 
     // Same planted slot-0 pull, same integer uniformity rational.
     "llm_mcq_position_bias" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('mcqt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4 AS truth,
-        |    CASE WHEN ('0x' || substring(md5('mcqb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 4
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("mcqt", "doc_id", 8)} % 4 AS truth,
+        |    CASE WHEN ${duckMd5Bits("mcqb", "doc_id", 8)} % 10 < 4
         |      THEN 0
-        |      ELSE ('0x' || substring(md5('mcqp:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4 END AS pred
+        |      ELSE ${duckMd5Bits("mcqp", "doc_id", 8)} % 4 END AS pred
         |  FROM documents),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CASE WHEN pred = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
@@ -6138,10 +6071,10 @@ object Analytics extends Family {
 
     // Same noisy proxy, same deterministic argmax, same regret ledger.
     "llm_best_of_n" ->
-      """WITH t AS (SELECT doc_id, doc_id // 10 AS grp,
-        |    ('0x' || substring(md5('bq:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS q,
-        |    ('0x' || substring(md5('bq:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000
-        |      + ('0x' || substring(md5('be:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 400 - 200 AS score
+      s"""WITH t AS (SELECT doc_id, doc_id // 10 AS grp,
+        |    ${duckMd5Bits("bq", "doc_id", 8)} % 1000 AS q,
+        |    ${duckMd5Bits("bq", "doc_id", 8)} % 1000
+        |      + ${duckMd5Bits("be", "doc_id", 8)} % 400 - 200 AS score
         |  FROM documents),
         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY score DESC, doc_id) AS rn
         |  FROM t),
@@ -6162,17 +6095,15 @@ object Analytics extends Family {
 
     // Same vote cascade with ties-to-smallest, same exact gain.
     "llm_self_consistency" -> {
-      def u(ns: String) =
-        s"(('0x' || substring(md5('$ns:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT)"
       def samp(i: Int) =
-        s"(CASE WHEN ${u(s"scs$i")} % 10 < 4 THEN truth ELSE ${u(s"scr$i")} % 4 END)"
+        s"(CASE WHEN (${duckMd5Bits(s"scs$i", "doc_id", 8)}) % 10 < 4 THEN truth ELSE (${duckMd5Bits(s"scr$i", "doc_id", 8)}) % 4 END)"
       val sampCols = (1 to 5).map(i => s"    ${samp(i)} AS s$i").mkString(",\n")
       val voteCols = (0 to 3).map { a =>
         val terms = (1 to 5).map(i => s"(CASE WHEN s$i = $a THEN 1 ELSE 0 END)").mkString(" + ")
         s"    CAST($terms AS BIGINT) AS v$a"
       }.mkString(",\n")
       s"""WITH t AS (SELECT doc_id,
-         |    ${u("sct")} % 4 AS truth
+         |    (${duckMd5Bits("sct", "doc_id", 8)}) % 4 AS truth
          |  FROM documents),
          |s AS (SELECT doc_id, truth,
          |$sampCols
@@ -6218,10 +6149,10 @@ object Analytics extends Family {
 
     // Same planted discount, same exact rank-sum AUC.
     "llm_membership_inference" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('mem:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS member,
-        |    2000 + ('0x' || substring(md5('ln:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000
-        |      - (('0x' || substring(md5('mem:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2) * 300 AS loss_milli
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("mem", "doc_id", 8)} % 2 AS member,
+        |    2000 + ${duckMd5Bits("ln", "doc_id", 8)} % 1000
+        |      - (${duckMd5Bits("mem", "doc_id", 8)} % 2) * 300 AS loss_milli
         |  FROM documents),
         |r AS (SELECT *,
         |    CAST(ROW_NUMBER() OVER (ORDER BY loss_milli, doc_id) AS BIGINT) AS rk
@@ -6273,8 +6204,8 @@ object Analytics extends Family {
 
     // Same shard proxies, same cancellation-law exact rational.
     "llm_grad_noise_scale" ->
-      """WITH t AS (SELECT doc_id % 64 AS shard,
-        |    1000 + ('0x' || substring(md5('gns:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 400 - 200 AS g
+      s"""WITH t AS (SELECT doc_id % 64 AS shard,
+        |    1000 + ${duckMd5Bits("gns", "doc_id", 8)} % 400 - 200 AS g
         |  FROM documents),
         |sh AS (SELECT shard, CAST(SUM(g) AS BIGINT) AS gs FROM t GROUP BY 1),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -6300,13 +6231,11 @@ object Analytics extends Family {
 
     // Same endpoint cascade, same partition-of-13 rollup.
     "fn_allen_intervals" -> {
-      def u(ns: String) =
-        s"(('0x' || substring(md5('$ns:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT)"
       s"""WITH t AS (SELECT event_id,
-         |    ${u("ia")} % 1000 AS a1,
-         |    ${u("ia")} % 1000 + ${u("il")} % 100 + 1 AS a2,
-         |    ${u("ib")} % 1000 AS b1,
-         |    ${u("ib")} % 1000 + ${u("im")} % 100 + 1 AS b2
+         |    (${duckMd5Bits("ia", "event_id", 8)}) % 1000 AS a1,
+         |    (${duckMd5Bits("ia", "event_id", 8)}) % 1000 + (${duckMd5Bits("il", "event_id", 8)}) % 100 + 1 AS a2,
+         |    (${duckMd5Bits("ib", "event_id", 8)}) % 1000 AS b1,
+         |    (${duckMd5Bits("ib", "event_id", 8)}) % 1000 + (${duckMd5Bits("im", "event_id", 8)}) % 100 + 1 AS b2
          |  FROM events),
          |c AS (SELECT CASE
          |    WHEN a2 < b1 THEN 'precedes'
@@ -6365,7 +6294,7 @@ object Analytics extends Family {
     // Same md5 arm draw, same exact-rational posterior moments cleared to
     // ppm/ppb integer DIVs (all numerators non-negative).
     "agg_beta_binomial" ->
-      """WITH h AS (SELECT CASE WHEN ('0x' || substring(md5('bb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 3
+      s"""WITH h AS (SELECT CASE WHEN ${duckMd5Bits("bb", "doc_id", 8)} % 10 < 3
         |      THEN 1 ELSE 0 END AS hit FROM documents),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(hit) AS BIGINT) AS k FROM h),
         |p AS (SELECT n, k, 2 + k AS alpha_post, 8 + n - k AS beta_post FROM a)
@@ -6380,11 +6309,11 @@ object Analytics extends Family {
 
     // Same planted arm, same 64 sign-flips, same cleared comparisons.
     "agg_permutation_test" ->
-      """WITH b AS (SELECT doc_id,
-        |    ('0x' || substring(md5('pa:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS arm
+      s"""WITH b AS (SELECT doc_id,
+        |    ${duckMd5Bits("pa", "doc_id", 8)} % 2 AS arm
         |  FROM documents),
         |bx AS (SELECT doc_id, arm,
-        |    ('0x' || substring(md5('pm:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    ${duckMd5Bits("pm", "doc_id", 8)} % 1000
         |      + arm * 150 AS x
         |  FROM b),
         |o AS (SELECT CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -6394,7 +6323,7 @@ object Analytics extends Family {
         |  FROM bx),
         |ob AS (SELECT *, abs(s_a * n_b - s_b * n_a) AS d_obs FROM o),
         |pm AS (SELECT perm, doc_id, x,
-        |    ('0x' || substring(md5('pp:' || CAST(perm AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS parm
+        |    ${duckMd5Bits("'pp:' || CAST(perm AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 8)} % 2 AS parm
         |  FROM bx CROSS JOIN (SELECT CAST(p AS BIGINT) AS perm
         |    FROM generate_series(0, 63) t(p))),
         |pj AS (SELECT perm,
@@ -6414,9 +6343,9 @@ object Analytics extends Family {
 
     // Same confusion, same HUGEINT marginal product, same sign-safe square.
     "agg_mcc" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('mct:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS truth,
-        |    ('0x' || substring(md5('mcf:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 AS flip
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("mct", "doc_id", 8)} % 2 AS truth,
+        |    ${duckMd5Bits("mcf", "doc_id", 8)} % 10 AS flip
         |  FROM documents),
         |p AS (SELECT truth,
         |    CASE WHEN flip < 2 THEN 1 - truth ELSE truth END AS pred FROM t),
@@ -6438,10 +6367,10 @@ object Analytics extends Family {
 
     // Same planted predictor, same per-class ppm divisions.
     "agg_f1_multiclass" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('f1t:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 AS truth,
-        |    ('0x' || substring(md5('f1f:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 AS flip,
-        |    ('0x' || substring(md5('f1p:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS alt
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("f1t", "doc_id", 8)} % 3 AS truth,
+        |    ${duckMd5Bits("f1f", "doc_id", 8)} % 10 AS flip,
+        |    ${duckMd5Bits("f1p", "doc_id", 8)} % 2 AS alt
         |  FROM documents),
         |p AS (SELECT truth,
         |    CASE WHEN flip < 2 THEN (truth + 1 + alt) % 3 ELSE truth END AS pred FROM t),
@@ -6497,9 +6426,9 @@ object Analytics extends Family {
 
     // Same 2×2, same HUGEINT cross-multiplied verdict.
     "agg_odds_ratio" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('ore:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS exposed,
-        |    ('0x' || substring(md5('oro:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS r
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("ore", "doc_id", 8)} % 2 AS exposed,
+        |    ${duckMd5Bits("oro", "doc_id", 8)} % 100 AS r
         |  FROM documents),
         |x AS (SELECT exposed, CASE WHEN r < 30 + exposed * 15 THEN 1 ELSE 0 END AS outcome FROM t),
         |c AS (SELECT
@@ -6517,9 +6446,9 @@ object Analytics extends Family {
 
     // Same signed flow, same cumsum extremes.
     "win_obv" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
-        |    ('0x' || substring(md5('obv:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 100 + 1 AS vol
+        |    ${duckMd5Bits("obv", "event_id", 8)} % 100 + 1 AS vol
         |  FROM events),
         |d AS (SELECT *, cents - LAG(cents, 1) OVER o AS delta
         |  FROM e WINDOW o AS (PARTITION BY event_type ORDER BY ts_us, event_id)),
@@ -6536,11 +6465,11 @@ object Analytics extends Family {
 
     // Same planted spikes/drift, same cleared rule comparisons.
     "win_spc_rules" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
         |      ORDER BY epoch_us(ts), event_id) AS BIGINT) AS rn0
         |  FROM events),
-        |x AS (SELECT *, 500 + ('0x' || substring(md5('spn:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 41 - 20
+        |x AS (SELECT *, 500 + ${duckMd5Bits("spn", "event_id", 8)} % 41 - 20
         |    + CASE WHEN event_id % 97 = 0 THEN 150 ELSE 0 END
         |    + CASE WHEN rn0 % 250 < 12 THEN 40 ELSE 0 END AS x
         |  FROM e),
@@ -6564,11 +6493,11 @@ object Analytics extends Family {
 
     // Same ×14 scaling, same 22-bar trail, same 3-ATR backoff.
     "win_chandelier_exit" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
         |h AS (SELECT *,
-        |    cents + ('0x' || substring(md5('ceh:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS h,
-        |    cents - ('0x' || substring(md5('cel:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS l
+        |    cents + ${duckMd5Bits("ceh", "event_id", 8)} % 50 AS h,
+        |    cents - ${duckMd5Bits("cel", "event_id", 8)} % 50 AS l
         |  FROM e),
         |p AS (SELECT *, COALESCE(LAG(cents, 1) OVER o, cents) AS pc,
         |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
@@ -6590,13 +6519,13 @@ object Analytics extends Family {
 
     // Same 5-stratum clearing, same declared per-term milli truncation.
     "agg_stratified_ate" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('saz:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 5 AS z
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("saz", "doc_id", 8)} % 5 AS z
         |  FROM documents),
         |v AS (SELECT z,
-        |    CASE WHEN ('0x' || substring(md5('sat:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+        |    CASE WHEN ${duckMd5Bits("sat", "doc_id", 8)} % 100
         |      < 20 + 15 * z THEN 1 ELSE 0 END AS t,
-        |    ('0x' || substring(md5('say:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 21 - 10 AS e
+        |    ${duckMd5Bits("say", "doc_id", 8)} % 21 - 10 AS e
         |  FROM t),
         |y AS (SELECT z, t, 100 + 30 * t + 20 * z + e AS y FROM v),
         |s AS (SELECT z, CAST(COUNT(*) AS BIGINT) AS nz,
@@ -6621,10 +6550,10 @@ object Analytics extends Family {
 
     // Same bucket counts, same (ca·nb − cb·na)² clearing, plain SQL sum.
     "agg_mmd_buckets" ->
-      """WITH t AS (SELECT doc_id, doc_id % 2 AS half,
-        |    ('0x' || substring(md5('mmb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 AS base,
-        |    CASE WHEN ('0x' || substring(md5('mms:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 4
-        |      THEN 0 ELSE ('0x' || substring(md5('mmb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10
+      s"""WITH t AS (SELECT doc_id, doc_id % 2 AS half,
+        |    ${duckMd5Bits("mmb", "doc_id", 8)} % 10 AS base,
+        |    CASE WHEN ${duckMd5Bits("mms", "doc_id", 8)} % 10 < 4
+        |      THEN 0 ELSE ${duckMd5Bits("mmb", "doc_id", 8)} % 10
         |    END AS shifted
         |  FROM documents),
         |sa AS (SELECT base AS b, CAST(COUNT(*) AS BIGINT) AS ca FROM t WHERE half = 0 GROUP BY 1),
@@ -6652,18 +6581,18 @@ object Analytics extends Family {
 
     // Same fixed value cut, same pure-count conditionals.
     "agg_tail_dependence" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('tdz:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS z
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("tdz", "doc_id", 8)} % 100 AS z
         |  FROM documents),
         |v AS (SELECT
         |    CASE WHEN z > 90 THEN 100 ELSE 0 END
-        |      + ('0x' || substring(md5('tdx:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS x,
+        |      + ${duckMd5Bits("tdx", "doc_id", 8)} % 100 AS x,
         |    CASE WHEN z > 90 THEN 100 ELSE 0 END
-        |      + ('0x' || substring(md5('tdy:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS y,
-        |    CASE WHEN ('0x' || substring(md5('tdu:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 > 90 THEN 100 ELSE 0 END
-        |      + ('0x' || substring(md5('tdv:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS x2,
-        |    CASE WHEN ('0x' || substring(md5('tdw:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 > 90 THEN 100 ELSE 0 END
-        |      + ('0x' || substring(md5('tdq:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS y2
+        |      + ${duckMd5Bits("tdy", "doc_id", 8)} % 100 AS y,
+        |    CASE WHEN ${duckMd5Bits("tdu", "doc_id", 8)} % 100 > 90 THEN 100 ELSE 0 END
+        |      + ${duckMd5Bits("tdv", "doc_id", 8)} % 100 AS x2,
+        |    CASE WHEN ${duckMd5Bits("tdw", "doc_id", 8)} % 100 > 90 THEN 100 ELSE 0 END
+        |      + ${duckMd5Bits("tdq", "doc_id", 8)} % 100 AS y2
         |  FROM t),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CASE WHEN x > 150 THEN 1 ELSE 0 END) AS BIGINT) AS nx,
@@ -6679,10 +6608,10 @@ object Analytics extends Family {
 
     // Same n²-cleared single rational, same shift penalty.
     "agg_lin_ccc" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('lcz:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS z,
-        |    ('0x' || substring(md5('lcx:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 30 AS ex,
-        |    ('0x' || substring(md5('lcy:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 30 AS ey
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("lcz", "doc_id", 8)} % 100 AS z,
+        |    ${duckMd5Bits("lcx", "doc_id", 8)} % 30 AS ex,
+        |    ${duckMd5Bits("lcy", "doc_id", 8)} % 30 AS ey
         |  FROM documents),
         |p AS (SELECT 'aligned' AS pair, 0 AS shift FROM (VALUES (1)) s(v)
         |  UNION ALL SELECT 'shifted', 10 FROM (VALUES (1)) s(v)),
@@ -6723,16 +6652,16 @@ object Analytics extends Family {
 
     // Same 3-rater plant, same single-rational clearing.
     "agg_fleiss_kappa" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('fkt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 AS truth
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("fkt", "doc_id", 8)} % 3 AS truth
         |  FROM documents),
         |r AS (SELECT doc_id, truth,
-        |    CASE WHEN ('0x' || substring(md5('fkf1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 8
-        |      THEN truth ELSE (truth + 1 + ('0x' || substring(md5('fko1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2) % 3 END AS r1,
-        |    CASE WHEN ('0x' || substring(md5('fkf2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 8
-        |      THEN truth ELSE (truth + 1 + ('0x' || substring(md5('fko2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2) % 3 END AS r2,
-        |    CASE WHEN ('0x' || substring(md5('fkf3:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 8
-        |      THEN truth ELSE (truth + 1 + ('0x' || substring(md5('fko3:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2) % 3 END AS r3
+        |    CASE WHEN ${duckMd5Bits("fkf1", "doc_id", 8)} % 10 < 8
+        |      THEN truth ELSE (truth + 1 + ${duckMd5Bits("fko1", "doc_id", 8)} % 2) % 3 END AS r1,
+        |    CASE WHEN ${duckMd5Bits("fkf2", "doc_id", 8)} % 10 < 8
+        |      THEN truth ELSE (truth + 1 + ${duckMd5Bits("fko2", "doc_id", 8)} % 2) % 3 END AS r2,
+        |    CASE WHEN ${duckMd5Bits("fkf3", "doc_id", 8)} % 10 < 8
+        |      THEN truth ELSE (truth + 1 + ${duckMd5Bits("fko3", "doc_id", 8)} % 2) % 3 END AS r3
         |  FROM t),
         |c AS (SELECT
         |    CASE WHEN r1 = 0 THEN 1 ELSE 0 END + CASE WHEN r2 = 0 THEN 1 ELSE 0 END + CASE WHEN r3 = 0 THEN 1 ELSE 0 END AS n0,
@@ -6762,10 +6691,10 @@ object Analytics extends Family {
 
     // Same 8-item judge panel, same exact rank sums.
     "agg_kendall_w" ->
-      """WITH items AS (SELECT doc_id AS item FROM documents WHERE doc_id < 8),
+      s"""WITH items AS (SELECT doc_id AS item FROM documents WHERE doc_id < 8),
         |j AS (SELECT CAST(v AS BIGINT) AS judge FROM generate_series(0, 3) s(v)),
         |sc AS (SELECT item, judge,
-        |    ('0x' || substring(md5('kw:' || CAST(judge AS VARCHAR) || ':' || CAST(item AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    ${duckMd5Bits("'kw:' || CAST(judge AS VARCHAR) || ':' || CAST(item AS VARCHAR)", 8)} % 1000
         |      + item * 400 AS score
         |  FROM items CROSS JOIN j),
         |rk AS (SELECT item, CAST(ROW_NUMBER() OVER (PARTITION BY judge
@@ -6780,10 +6709,10 @@ object Analytics extends Family {
 
     // Same two-tier noise, same cross-multiplied limits test.
     "agg_bland_altman" ->
-      """WITH t AS (SELECT doc_id,
-        |    20 + CASE WHEN ('0x' || substring(md5('bao:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 = 0
-        |      THEN ('0x' || substring(md5('ban:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 181 - 90
-        |      ELSE ('0x' || substring(md5('ban:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 61 - 30
+      s"""WITH t AS (SELECT doc_id,
+        |    20 + CASE WHEN ${duckMd5Bits("bao", "doc_id", 8)} % 10 = 0
+        |      THEN ${duckMd5Bits("ban", "doc_id", 8)} % 181 - 90
+        |      ELSE ${duckMd5Bits("ban", "doc_id", 8)} % 61 - 30
         |    END AS diff
         |  FROM documents),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(diff) AS BIGINT) AS sd,
@@ -6799,8 +6728,8 @@ object Analytics extends Family {
 
     // Same one dataset, same two orderings, same cleared milli DIV.
     "agg_durbin_watson" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    ('0x' || substring(md5('dwk:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT AS hk
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    ${duckMd5Bits("dwk", "event_id", 8)} AS hk
         |  FROM events),
         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY event_type
         |      ORDER BY ts_us, event_id) AS BIGINT) AS rn FROM e),
@@ -6825,8 +6754,8 @@ object Analytics extends Family {
 
     // Same planted demand, same ×10 asymmetric loss.
     "agg_pinball_loss" ->
-      """WITH e AS (SELECT event_type,
-        |    ('0x' || substring(md5('pb:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS a
+      s"""WITH e AS (SELECT event_type,
+        |    ${duckMd5Bits("pb", "event_id", 8)} % 1000 AS a
         |  FROM events),
         |l AS (SELECT event_type,
         |    CASE WHEN a >= 900 THEN 9 * (a - 900) ELSE 900 - a END AS la_x10,
@@ -6840,12 +6769,12 @@ object Analytics extends Family {
 
     // Same ten power sums, same declared ÷10⁶ scale-down before squaring.
     "agg_partial_corr" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('pcz:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS z
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("pcz", "doc_id", 8)} % 100 AS z
         |  FROM documents),
         |v AS (SELECT z,
-        |    z + ('0x' || substring(md5('pcx:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS x,
-        |    z + ('0x' || substring(md5('pcy:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS y
+        |    z + ${duckMd5Bits("pcx", "doc_id", 8)} % 50 AS x,
+        |    z + ${duckMd5Bits("pcy", "doc_id", 8)} % 50 AS y
         |  FROM t),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(z) AS BIGINT) AS sz,
@@ -6878,14 +6807,14 @@ object Analytics extends Family {
 
     // Same n²-cleared variance sums, same cross-multiplied 0.7 bar.
     "agg_cronbach_alpha" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('cat:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS tt
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("cat", "doc_id", 8)} % 100 AS tt
         |  FROM documents),
         |i AS (SELECT
-        |    tt + ('0x' || substring(md5('ca1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS i1,
-        |    tt + ('0x' || substring(md5('ca2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS i2,
-        |    tt + ('0x' || substring(md5('ca3:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS i3,
-        |    tt + ('0x' || substring(md5('ca4:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS i4
+        |    tt + ${duckMd5Bits("ca1", "doc_id", 8)} % 50 AS i1,
+        |    tt + ${duckMd5Bits("ca2", "doc_id", 8)} % 50 AS i2,
+        |    tt + ${duckMd5Bits("ca3", "doc_id", 8)} % 50 AS i3,
+        |    tt + ${duckMd5Bits("ca4", "doc_id", 8)} % 50 AS i4
         |  FROM t),
         |s AS (SELECT i1, i2, i3, i4, i1 + i2 + i3 + i4 AS tot FROM i),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -6908,13 +6837,13 @@ object Analytics extends Family {
 
     // Same cleared leverage rule, same two declared truncations.
     "agg_regression_influence" ->
-      """WITH p AS (SELECT doc_id,
+      s"""WITH p AS (SELECT doc_id,
         |    CASE WHEN doc_id < 5 THEN 5000 + doc_id * 100
-        |      ELSE ('0x' || substring(md5('rix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |      ELSE ${duckMd5Bits("rix", "doc_id", 8)} % 1000
         |    END AS x
         |  FROM documents),
         |py AS (SELECT doc_id, x,
-        |    2 * x + 100 + ('0x' || substring(md5('rin:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 101 - 50 AS y
+        |    2 * x + 100 + ${duckMd5Bits("rin", "doc_id", 8)} % 101 - 50 AS y
         |  FROM p),
         |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx,
         |    CAST(SUM(x * x) AS BIGINT) AS sx2 FROM py),
@@ -6928,13 +6857,13 @@ object Analytics extends Family {
 
     // Same top-64 pairing, same cross-multiplied inlier test.
     "agg_ransac_line" ->
-      """WITH pts AS (SELECT doc_id,
-        |    ('0x' || substring(md5('rsx:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS x
+      s"""WITH pts AS (SELECT doc_id,
+        |    ${duckMd5Bits("rsx", "doc_id", 8)} % 1000 AS x
         |  FROM documents),
         |py AS (SELECT doc_id, x,
-        |    CASE WHEN ('0x' || substring(md5('rso:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 = 0
-        |      THEN ('0x' || substring(md5('rsw:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3000
-        |      ELSE 3 * x + 50 + ('0x' || substring(md5('rsn:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 41 - 20
+        |    CASE WHEN ${duckMd5Bits("rso", "doc_id", 8)} % 10 = 0
+        |      THEN ${duckMd5Bits("rsw", "doc_id", 8)} % 3000
+        |      ELSE 3 * x + 50 + ${duckMd5Bits("rsn", "doc_id", 8)} % 41 - 20
         |    END AS y FROM pts),
         |top AS (SELECT *, md5('rsk:' || CAST(doc_id AS VARCHAR)) AS hk
         |  FROM py ORDER BY hk LIMIT 64),
@@ -6958,12 +6887,12 @@ object Analytics extends Family {
 
     // Same suffix-sum at-risk counts, same per-term micro truncation.
     "agg_logrank_test" ->
-      """WITH s AS (SELECT doc_id,
-        |    ('0x' || substring(md5('lra:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS arm,
-        |    ('0x' || substring(md5('lrt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS tb,
-        |    CASE WHEN ('0x' || substring(md5('lrh:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 4
+      s"""WITH s AS (SELECT doc_id,
+        |    ${duckMd5Bits("lra", "doc_id", 8)} % 2 AS arm,
+        |    ${duckMd5Bits("lrt", "doc_id", 8)} % 50 AS tb,
+        |    CASE WHEN ${duckMd5Bits("lrh", "doc_id", 8)} % 10 < 4
         |      THEN 1 ELSE 0 END AS hz,
-        |    CASE WHEN ('0x' || substring(md5('lre:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 7
+        |    CASE WHEN ${duckMd5Bits("lre", "doc_id", 8)} % 10 < 7
         |      THEN 1 ELSE 0 END AS event
         |  FROM documents),
         |t AS (SELECT arm, tb + 1 - arm * hz * (tb // 2) AS t, event FROM s),
@@ -6993,13 +6922,13 @@ object Analytics extends Family {
 
     // Same zero-range guard, same sign-safe per-term milli DIV.
     "win_adline" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
         |    CAST(FLOOR(value * 100) AS BIGINT)
-        |      + ('0x' || substring(md5('adh:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS h,
+        |      + ${duckMd5Bits("adh", "event_id", 8)} % 50 AS h,
         |    CAST(FLOOR(value * 100) AS BIGINT)
-        |      - ('0x' || substring(md5('adl:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS l,
-        |    ('0x' || substring(md5('adv:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 100 + 1 AS vol
+        |      - ${duckMd5Bits("adl", "event_id", 8)} % 50 AS l,
+        |    ${duckMd5Bits("adv", "event_id", 8)} % 100 + 1 AS vol
         |  FROM events),
         |m AS (SELECT *,
         |    CASE WHEN h = l THEN CAST(0 AS BIGINT)
@@ -7015,11 +6944,11 @@ object Analytics extends Family {
 
     // Same planted dip, same 20³ interval-grid minimax.
     "agg_isotonic_pav" ->
-      """WITH b AS (SELECT
-        |    ('0x' || substring(md5('ipb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 // 50 AS bin,
-        |    CASE WHEN ('0x' || substring(md5('ipy:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000
-        |      < 200 + (('0x' || substring(md5('ipb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 // 50) * 40
-        |        - CASE WHEN ('0x' || substring(md5('ipb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 // 50 = 7
+      s"""WITH b AS (SELECT
+        |    ${duckMd5Bits("ipb", "doc_id", 8)} % 1000 // 50 AS bin,
+        |    CASE WHEN ${duckMd5Bits("ipy", "doc_id", 8)} % 1000
+        |      < 200 + (${duckMd5Bits("ipb", "doc_id", 8)} % 1000 // 50) * 40
+        |        - CASE WHEN ${duckMd5Bits("ipb", "doc_id", 8)} % 1000 // 50 = 7
         |          THEN 250 ELSE 0 END
         |      THEN 1 ELSE 0 END AS y
         |  FROM documents),
@@ -7039,11 +6968,11 @@ object Analytics extends Family {
 
     // Same cleared one-sided pair, same naive two-sided contrast.
     "agg_tost_equivalence" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('tse:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS arm
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("tse", "doc_id", 8)} % 2 AS arm
         |  FROM documents),
         |c AS (SELECT arm,
-        |    CASE WHEN ('0x' || substring(md5('tsc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    CASE WHEN ${duckMd5Bits("tsc", "doc_id", 8)} % 1000
         |      < 300 + arm * 3 THEN 1 ELSE 0 END AS conv FROM t),
         |a AS (SELECT
         |    CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
@@ -7072,11 +7001,11 @@ object Analytics extends Family {
 
     // Same planted Bernoulli(p), same ppm² sums, same single DIV.
     "agg_brier_score" ->
-      """WITH t AS (SELECT doc_id,
-        |    (('0x' || substring(md5('brp:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1001) * 1000 AS p_ppm
+      s"""WITH t AS (SELECT doc_id,
+        |    (${duckMd5Bits("brp", "doc_id", 8)} % 1001) * 1000 AS p_ppm
         |  FROM documents),
         |y AS (SELECT *,
-        |    CASE WHEN ('0x' || substring(md5('bry:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000000 < p_ppm
+        |    CASE WHEN ${duckMd5Bits("bry", "doc_id", 8)} % 1000000 < p_ppm
         |      THEN 1 ELSE 0 END AS y,
         |    CASE WHEN p_ppm >= 500000 THEN (p_ppm + 1000000) // 2
         |      ELSE p_ppm // 2 END AS q_ppm
@@ -7090,11 +7019,11 @@ object Analytics extends Family {
 
     // Same grid, same numerator-only argmax, same deterministic pick.
     "agg_youden_j" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('yjt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS truth
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("yjt", "doc_id", 8)} % 2 AS truth
         |  FROM documents),
         |sc AS (SELECT *,
-        |    ('0x' || substring(md5('yjs:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 700000
+        |    ${duckMd5Bits("yjs", "doc_id", 8)} % 700000
         |      + truth * 300000 AS score FROM t),
         |tot AS (SELECT CAST(SUM(truth) AS BIGINT) AS p,
         |    CAST(SUM(1 - truth) AS BIGINT) AS nneg FROM sc),
@@ -7110,8 +7039,8 @@ object Analytics extends Family {
 
     // Same group-level ×2 average ranks, same tie-corrected verdict.
     "agg_wilcoxon_signed_rank" ->
-      """WITH t AS (SELECT doc_id,
-        |    25 + ('0x' || substring(md5('wsn:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 101 - 50 AS diff
+      s"""WITH t AS (SELECT doc_id,
+        |    25 + ${duckMd5Bits("wsn", "doc_id", 8)} % 101 - 50 AS diff
         |  FROM documents),
         |nz AS (SELECT diff, ABS(diff) AS adiff FROM t WHERE diff <> 0),
         |g AS (SELECT adiff, CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -7132,11 +7061,11 @@ object Analytics extends Family {
 
     // Same md5 spreads, same first-bar pc=close rule, same ×14 sum.
     "win_atr" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
         |h AS (SELECT *,
-        |    cents + ('0x' || substring(md5('ath:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS h,
-        |    cents - ('0x' || substring(md5('atl:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 AS l
+        |    cents + ${duckMd5Bits("ath", "event_id", 8)} % 50 AS h,
+        |    cents - ${duckMd5Bits("atl", "event_id", 8)} % 50 AS l
         |  FROM e),
         |p AS (SELECT *, COALESCE(LAG(cents, 1) OVER o, cents) AS pc,
         |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
@@ -7207,9 +7136,9 @@ object Analytics extends Family {
     // fold — replayed as a RECURSIVE CTE over the death-time index
     // (struct elements, so list_reduce is out per the fold law).
     "agg_kaplan_meier" ->
-      """WITH RECURSIVE u AS (SELECT DISTINCT user_id FROM events),
+      s"""WITH RECURSIVE u AS (SELECT DISTINCT user_id FROM events),
         |pl AS (SELECT user_id,
-        |    ('0x' || substring(md5('km:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS dur_raw
+        |    ${duckMd5Bits("km", "user_id", 8)} % 100 AS dur_raw
         |  FROM u),
         |lab AS (SELECT user_id % 3 AS cohort, LEAST(dur_raw, 60) AS dur,
         |    CASE WHEN dur_raw <= 60 THEN 1 ELSE 0 END AS evt

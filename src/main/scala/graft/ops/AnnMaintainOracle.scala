@@ -13,11 +13,11 @@ package graft.ops
   * floor(CAST(x AS DOUBLE) * 10000) BIGINTs, dots are integer sums
   * (≤ 64·10⁸ — far inside int64), every top-k is ROW_NUMBER with a
   * (metric DESC, id ASC) total order, and the centroid sampler is
-  * ('0x' || substring(md5(vec_id), 1, 8))::BIGINT % floor(sqrt(n)).
+  * `duckMd5Bits` of the vec_id, 8 hex digits, % floor(sqrt(n)).
   */
 object AnnMaintainOracle {
   val sql: String =
-    """WITH pos AS (SELECT CAST(i AS BIGINT) AS pos FROM generate_series(0, 63) AS t(i)),
+    s"""WITH pos AS (SELECT CAST(i AS BIGINT) AS pos FROM generate_series(0, 63) AS t(i)),
       |raw AS (
       |  SELECT e.vec_id, p.pos,
       |    CAST(FLOOR(CAST(e.embedding[p.pos + 1] AS DOUBLE) * 10000) AS BIGINT) AS xm
@@ -32,10 +32,10 @@ object AnnMaintainOracle {
       |  FROM un),
       |cent_stale AS (
       |  SELECT c.vec_id AS cid, c.pos, c.xm AS cm FROM corpus c, mod_stale
-      |  WHERE ('0x' || substring(md5(CAST(c.vec_id AS VARCHAR)), 1, 8))::BIGINT % mod_stale.m = 0),
+      |  WHERE ${duckMd5Bits("CAST(c.vec_id AS VARCHAR)", 8)} % mod_stale.m = 0),
       |cent_fresh AS (
       |  SELECT u.vec_id AS cid, u.pos, u.xm AS cm FROM un u, mod_fresh
-      |  WHERE ('0x' || substring(md5(CAST(u.vec_id AS VARCHAR)), 1, 8))::BIGINT % mod_fresh.m = 0),
+      |  WHERE ${duckMd5Bits("CAST(u.vec_id AS VARCHAR)", 8)} % mod_fresh.m = 0),
       |probe_ids AS (
       |  SELECT vec_id FROM (SELECT DISTINCT vec_id FROM drift)
       |  ORDER BY md5('probe:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 200),

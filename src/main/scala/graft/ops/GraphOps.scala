@@ -223,8 +223,7 @@ object GraphOps extends Family {
           .withColumn("tot", sum("w").over(
             ws.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
           .withColumn("r", expr(
-            s"""CAST(conv(substring(md5(concat(CAST(start AS STRING), ':',
-                CAST(prev AS STRING), ':', CAST(node AS STRING), ':', '$t')), 1, 8), 16, 10) AS BIGINT)
+            s"""${md5Bits(s"concat(CAST(start AS STRING), ':', CAST(prev AS STRING), ':', CAST(node AS STRING), ':', '$t')", 8)}
                 % tot"""))
           .where(col("r") >= col("cum") && col("r") < col("cum") + col("w"))
           .select(col("start"), col("dst").as("node"), col("node").as("prev"),
@@ -811,7 +810,7 @@ object GraphOps extends Family {
       for (t <- 1 to 4) {
         walk = walk.select(col("start"), col("node"))
           .withColumn("h", expr(
-            s"CAST(conv(substring(md5(concat(CAST(start AS STRING), ':', CAST(node AS STRING), ':', '$t')), 1, 8), 16, 10) AS BIGINT)"))
+            md5Bits(s"concat(CAST(start AS STRING), ':', CAST(node AS STRING), ':', '$t')", 8)))
           .join(ad, col("node") === col("src") && expr("h % deg") === col("r"))
           .select(col("start"), col("dst").as("node"), lit(t.toLong).as("step"))
           .localCheckpoint()
@@ -1155,7 +1154,7 @@ object GraphOps extends Family {
             col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
           .agg(count(lit(1)).as("n"))
       val coin = expr(
-        "CAST(conv(substring(md5(concat('tri:', CAST(a AS STRING), ':', CAST(b AS STRING))), 1, 8), 16, 10) AS BIGINT) % 4")
+        s"${md5Bits("concat('tri:', CAST(a AS STRING), ':', CAST(b AS STRING))", 8)} % 4")
       tri(und).select(col("n").as("exact_triangles"))
         .crossJoin(tri(und.where(coin === 0)).select((col("n") * 64).as("estimated")))
         .withColumn("err_signed_ppm",
@@ -1672,12 +1671,8 @@ object GraphOps extends Family {
            |w$t AS MATERIALIZED (SELECT start, dst AS node, node AS prev,
            |    CAST($t AS BIGINT) AS step
            |  FROM k$t
-           |  WHERE ('0x' || substring(md5(CAST(start AS VARCHAR) || ':'
-           |      || CAST(prev AS VARCHAR) || ':' || CAST(node AS VARCHAR) || ':' || '$t'),
-           |      1, 8))::BIGINT % tot >= cum
-           |    AND ('0x' || substring(md5(CAST(start AS VARCHAR) || ':'
-           |      || CAST(prev AS VARCHAR) || ':' || CAST(node AS VARCHAR) || ':' || '$t'),
-           |      1, 8))::BIGINT % tot < cum + w)"""
+           |  WHERE ${duckMd5Bits(s"CAST(start AS VARCHAR) || ':' || CAST(prev AS VARCHAR) || ':' || CAST(node AS VARCHAR) || ':' || '$t'", 8)} % tot >= cum
+           |    AND ${duckMd5Bits(s"CAST(start AS VARCHAR) || ':' || CAST(prev AS VARCHAR) || ':' || CAST(node AS VARCHAR) || ':' || '$t'", 8)} % tot < cum + w)"""
       }.mkString(",\n")
       val union = (0 to 4).map(i => s"SELECT * FROM w$i").mkString(" UNION ALL ")
       s"""WITH $EdgesCte,
@@ -1744,9 +1739,7 @@ object GraphOps extends Family {
         s"""w$t AS MATERIALIZED (SELECT w$p.start, ad.dst AS node,
            |    CAST($t AS BIGINT) AS step
            |  FROM w$p JOIN ad ON ad.src = w$p.node
-           |    AND ad.r = ('0x' || substring(md5(
-           |      CAST(w$p.start AS VARCHAR) || ':' || CAST(w$p.node AS VARCHAR) || ':' || '$t'),
-           |      1, 8))::BIGINT % ad.deg)"""
+           |    AND ad.r = ${duckMd5Bits(s" CAST(w$p.start AS VARCHAR) || ':' || CAST(w$p.node AS VARCHAR) || ':' || '$t'", 8)} % ad.deg)"""
       }.mkString(",\n")
       val union = (0 to 4).map(i => s"SELECT * FROM w$i").mkString(" UNION ALL ")
       s"""WITH $EdgesCte,
@@ -2014,7 +2007,7 @@ object GraphOps extends Family {
          |$HeavyWCte,
          |h AS (SELECT a, b FROM hw),
          |sam AS (SELECT a, b FROM h
-         |  WHERE ('0x' || substring(md5('tri:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)), 1, 8))::BIGINT % 4 = 0),
+         |  WHERE ${duckMd5Bits("'tri:' || CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)", 8)} % 4 = 0),
          |ex AS (SELECT CAST(COUNT(*) AS BIGINT) AS exact_triangles
          |  FROM h ab JOIN h bc ON ab.b = bc.a
          |  JOIN h ac ON ac.a = ab.a AND ac.b = bc.b),

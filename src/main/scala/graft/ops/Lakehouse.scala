@@ -318,7 +318,7 @@ object Lakehouse extends Family {
   private val BloomK = 4
 
   /** Driver-side twin of the build's Spark-SQL hash
-    * (`conv(substring(md5('j:key'),1,15),16,10) % BloomBits`): the point
+    * (`md5Bits` of `'j:key'`, 15 hex digits, `% BloomBits`): the point
     * lookup plans against the sidecar WITHOUT a Spark job, so the same
     * positions must be computable on the driver. BloomIndexSpec asserts
     * byte parity between the two. */
@@ -382,8 +382,7 @@ object Lakehouse extends Family {
       .write.mode("overwrite").parquet(loadDir)
     commit(root, 1, fileStats(s, loadDir))
     val posCols = (0 until BloomK).map(j => expr(
-      s"CAST(conv(substring(md5(concat('$j:', CAST(o_custkey AS STRING))), " +
-        s"1, 15), 16, 10) AS BIGINT) % $BloomBits").cast("int"))
+      s"${md5Bits(j.toString, "o_custkey", 15)} % $BloomBits").cast("int"))
     val perFile = s.read.parquet(manifest(root, 1).map(_.path): _*)
       .select(input_file_name().as("path"),
         explode(array(posCols: _*)).as("pos"))
@@ -1539,8 +1538,8 @@ object Lakehouse extends Family {
         .select(col("o_year"),
           (coalesce(col("n_rows"), lit(0L)) + coalesce(col("d_rows"), lit(0L)))
             .as("n_rows"),
-          (coalesce(col("total"), lit(BigDecimal(0)).cast("decimal(18,4)"))
-            + coalesce(col("d_total"), lit(BigDecimal(0)).cast("decimal(18,4)")))
+          (coalesce(col("total"), dec(lit(BigDecimal(0))))
+            + coalesce(col("d_total"), dec(lit(BigDecimal(0)))))
             .cast("double").as("total"))
         .where(col("n_rows") > 0)
         .orderBy("o_year")

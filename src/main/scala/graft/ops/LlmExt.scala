@@ -55,7 +55,6 @@ object LlmExt extends Family {
 
   /** 60-bit token hash both engines can compute identically: the first 15
     * hex chars of md5. */
-  private val tokenHash60 = "CAST(conv(substring(md5(w), 1, 15), 16, 10) AS BIGINT)"
 
   /** Size-guarded broadcast regime for the dedup joins. The signal is the
     * SOURCE corpus scan's Catalyst estimate, not the derived frame's own
@@ -90,7 +89,7 @@ object LlmExt extends Family {
     * the 60 bit votes are 60 plain SUM aggregates, so the whole vote stays
     * inside whole-stage codegen (higher-order lambdas would interpret). */
   private[graft] def simhashes(s: SparkSession, d: String): DataFrame = {
-    val th = docTokens(s, d).select(col("doc_id"), expr(tokenHash60).as("h"))
+    val th = docTokens(s, d).select(col("doc_id"), expr(md5Bits("w", 15)).as("h"))
     // branch-free votes: ones_j = SUM((h>>j)&1); majority ⟺ 2·ones_j > n,
     // integer-identical to summing ±1 per token (2·ones − n) so the
     // brute-force DuckDB oracle is unchanged
@@ -327,7 +326,7 @@ object LlmExt extends Family {
       // DuckDB rounds).
       val nTot = e.agg(count(lit(1)).cast("double").as("n_tot"))
       val cent = e.crossJoin(broadcast(nTot))
-        .where(expr("CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT)")
+        .where(expr(md5Bits("CAST(vec_id AS STRING)", 8))
           .cast("double") < lit(4294967296.0) / sqrt(col("n_tot")))
         .select(col("vec_id").as("cid"), col("emb").as("cemb"))
       val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), col("cid"))
@@ -483,7 +482,7 @@ object LlmExt extends Family {
           "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
         )).as(Seq("i", "sgl")))
         .select(col("doc_id"), col("i"),
-          expr("CAST(conv(substring(md5(sgl), 1, 15), 16, 10) AS BIGINT)").as("h"))
+          expr(md5Bits("sgl", 15)).as("h"))
       val w = Window.partitionBy("doc_id").orderBy("i").rowsBetween(-3, 0)
       sh.withColumn("m", min(col("h")).over(w))
         .where(col("i") >= 3)
@@ -506,7 +505,7 @@ object LlmExt extends Family {
     "llm_sample_split" -> ((s, d) =>
       Tables.documents(s, d)
         .withColumn("u", expr(
-          "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"))
+          md5Bits("CAST(doc_id AS STRING)", 8)))
         .withColumn("split", expr(
           """CASE WHEN u < 3435973836 THEN 'train'
             |     WHEN u < 3865470566 THEN 'val'
@@ -887,8 +886,8 @@ object LlmExt extends Family {
     // Oracle is the brute-force all-pairs scan — the banded Spark plan must
     // produce the identical pair set.
     "llm_dedup_simhash" ->
-      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |th AS (SELECT doc_id, ('0x' || substring(md5(w), 1, 15))::BIGINT AS h FROM tk),
+      s"""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+        |th AS (SELECT doc_id, ${duckMd5Bits("w", 15)} AS h FROM tk),
         |bits AS (
         |  SELECT doc_id, j, SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS bsum
         |  FROM th, (SELECT unnest(range(0, 60)) AS j) GROUP BY doc_id, j
@@ -972,12 +971,12 @@ object LlmExt extends Family {
         |FROM sc ORDER BY doc_id""".stripMargin,
 
     "llm_fingerprint" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sp AS (
         |  SELECT d.doc_id, u.i, d.t[u.i] || ' ' || d.t[u.i+1] || ' ' || d.t[u.i+2] AS sgl
         |  FROM d, LATERAL (SELECT unnest(generate_series(1, len(d.t) - 2)) AS i) u
         |),
-        |h AS (SELECT doc_id, i, ('0x' || substring(md5(sgl), 1, 15))::BIGINT AS hv FROM sp),
+        |h AS (SELECT doc_id, i, ${duckMd5Bits("sgl", 15)} AS hv FROM sp),
         |wm AS (
         |  SELECT doc_id, i,
         |    MIN(hv) OVER (PARTITION BY doc_id ORDER BY i ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS m
@@ -1003,10 +1002,10 @@ object LlmExt extends Family {
     // The IVF algorithm itself, replayed in SQL: same centroids, same
     // 4-dp-rounded ranking keys, same nprobe=4 → identical output.
     "llm_sim_ann" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |st AS (SELECT COUNT(*) AS n_tot FROM e),
         |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
-        |         WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT * 1.0
+        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
         |               < 4294967296.0 / sqrt(n_tot * 1.0)),
         |assigned AS (
         |  SELECT vec_id, emb, cluster FROM (
@@ -1035,8 +1034,8 @@ object LlmExt extends Family {
 
     // DuckDB SUM(BIGINT) exports as HUGEINT→float64; recast per §7.3 law.
     "llm_sample_split" ->
-      """WITH u AS (SELECT lang, text,
-        |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+      s"""WITH u AS (SELECT lang, text,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
         |  FROM documents)
         |SELECT lang,
         |  CASE WHEN u < 3435973836 THEN 'train'

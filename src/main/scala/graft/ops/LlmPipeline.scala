@@ -111,7 +111,7 @@ object LlmPipeline extends Family {
     "llm_contamination" -> ((s, d) => {
       val sh = Tables.documents(s, d)
         .withColumn("u", expr(
-          "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"))
+          md5Bits("CAST(doc_id AS STRING)", 8)))
         .select(col("doc_id"), col("u"), split(col("text"), " ").as("t"))
         // <3-token docs: Spark sequence(0, -1) descends; DuckDB is empty
         .where(size(col("t")) > 2)
@@ -292,7 +292,7 @@ object LlmPipeline extends Family {
     "llm_ngram_overlap" -> ((s, d) => {
       val sh = Tables.documents(s, d)
         .withColumn("u", expr(
-          "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"))
+          md5Bits("CAST(doc_id AS STRING)", 8)))
         .select(col("doc_id"), col("u"), split(col("text"), " ").as("t"))
         .where(size(col("t")) > 2)
         .select(col("doc_id"), col("u"), explode(array_distinct(expr(
@@ -827,7 +827,7 @@ object LlmPipeline extends Family {
 
     "llm_contamination" ->
       s"""WITH dd AS (SELECT doc_id,
-         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
          |    string_split(text, ' ') AS t FROM documents),
          |sh AS (SELECT doc_id, u, unnest(list_distinct(list_transform(
          |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sg
@@ -924,7 +924,7 @@ object LlmPipeline extends Family {
 
     "llm_ngram_overlap" ->
       s"""WITH dd AS (SELECT doc_id,
-         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
          |    string_split(text, ' ') AS t FROM documents),
          |sh AS (SELECT doc_id, u, unnest(list_distinct(list_transform(
          |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sg

@@ -19,8 +19,6 @@ import graft.Tables
 object LlmPrep extends Family {
   /** md5-derived uniform key in [0, 2³²) — the same layout-independent,
     * engine-shared randomness the split/sample family uses. */
-  private val UExpr =
-    "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)"
 
   /** Context window (tokens) for packing. */
   private val Ctx = 1024L
@@ -48,7 +46,7 @@ object LlmPrep extends Family {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("n_tok"),
-          expr(UExpr).as("u"))
+          expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("bucket", col("u") % 32)
       val w = Window.partitionBy("bucket").orderBy("u", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -93,7 +91,7 @@ object LlmPrep extends Family {
     // aggregation keeps it to one shuffle on the stratum key.
     "llm_sample_stratified" -> ((s, d) =>
       Tables.documents(s, d)
-        .withColumn("u", expr(UExpr))
+        .withColumn("u", expr(md5Bits("CAST(doc_id AS STRING)", 8)))
         .withColumn("rate_milli",
           when(col("lang") === "en", 500L)
             .when(col("lang") === "de", 250L)
@@ -205,7 +203,7 @@ object LlmPrep extends Family {
       val rec = Tables.documents(s, d)
         .select(col("doc_id"),
           (col("n_chars").cast("bigint") + RecHeader).as("bytes"),
-          expr(UExpr).as("u"))
+          expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("bucket", col("u") % 8)
       val w = Window.partitionBy("bucket").orderBy("u", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -232,7 +230,7 @@ object LlmPrep extends Family {
     // rollup; zero shuffle before the final tiny aggregate.
     "mm_resolution_bucket" -> ((s, d) =>
       Tables.documents(s, d)
-        .select(col("doc_id"), expr(UExpr).as("u"))
+        .select(col("doc_id"), expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("w", lit(256L) + (col("u") % 8) * 128L)
         .withColumn("h", expr("256 + ((u DIV 8) % 8) * 128"))
         .withColumn("ratio_milli", expr("(w * 1000) DIV h"))
@@ -272,7 +270,7 @@ object LlmPrep extends Family {
     // window over the already-limited N rows (driver-scale, documented).
     "llm_interleave_mixture" -> ((s, d) => {
       val seq = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), expr(UExpr).as("u"))
+        .select(col("doc_id"), col("lang"), expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("wt", expr(
           """CASE lang WHEN 'en' THEN 5 WHEN 'es' THEN 3 WHEN 'de' THEN 3
             |  WHEN 'fr' THEN 2 ELSE 2 END""".stripMargin).cast("bigint"))
@@ -300,7 +298,7 @@ object LlmPrep extends Family {
     "llm_importance_resample" -> ((s, d) => {
       val K = 50L
       val t = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), expr(UExpr).as("u"),
+        .select(col("doc_id"), col("lang"), expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"),
           size(split(col("text"), " ")).cast("bigint").as("toks"),
           size(array_distinct(split(col("text"), " "))).cast("bigint").as("uniq"))
         .withColumn("w", expr("(uniq * 1000) DIV toks + 1"))
@@ -335,7 +333,7 @@ object LlmPrep extends Family {
     "llm_sample_weighted" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars").cast("bigint").as("w"),
-          expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)")
+          expr(md5Bits("CAST(doc_id AS STRING)", 15))
             .as("h"))
         .where(col("w") > 0)
         .withColumn("priority", expr("h DIV w"))
@@ -568,7 +566,7 @@ object LlmPrep extends Family {
         // lesson) — the static sum runs the identical arithmetic inside
         // whole-stage codegen, ~2× on the whole op
         .withColumn("ph", expr((0 to 30).map(i =>
-          s"shiftleft(CAST(conv(substring(md5(CAST(substring(text, $i * tl + 1, tl) AS BINARY)), 1, 1), 16, 10) AS BIGINT) & 3, ${2 * i})")
+          s"shiftleft(${md5Bits(s"CAST(substring(text, $i * tl + 1, tl) AS BINARY)", 1)} & 3, ${2 * i})")
           .mkString(" + ")))
         .select("doc_id", "ph")
       // materialized once: bands feeds BOTH the cap census and the
@@ -679,7 +677,7 @@ object LlmPrep extends Family {
     "llm_feature_hashing" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .withColumn("h", expr("CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT)"))
+        .withColumn("h", expr(md5Bits("w", 8)))
         .select(col("doc_id"), (col("h") % 16).as("bucket"),
           expr("CAST(CASE WHEN (h DIV 16) % 2 = 0 THEN 1 ELSE -1 END AS BIGINT)").as("sgn"))
         .groupBy("doc_id", "bucket")
@@ -709,7 +707,7 @@ object LlmPrep extends Family {
         .withColumn("frame_idx",
           explode(expr(s"sequence(0, CAST((len + ${FrameLen - 1}) DIV $FrameLen AS INT) - 1)")))
         .withColumn("fp", expr(
-          s"CAST(conv(substring(md5(CAST(substring(text, frame_idx * $FrameLen + 1, $FrameLen) AS BINARY)), 1, 2), 16, 10) AS BIGINT)"))
+          md5Bits(s"CAST(substring(text, frame_idx * $FrameLen + 1, $FrameLen) AS BINARY)", 2)))
         .withColumn("prev_fp", lag("fp", 1).over(
           Window.partitionBy("doc_id").orderBy("frame_idx")))
         .withColumn("hd", expr("CAST(bit_count(fp ^ prev_fp) AS BIGINT)"))
@@ -774,7 +772,7 @@ object LlmPrep extends Family {
       val hashBounds = docs
         .withColumn("i", explode(expr("sequence(8, CAST(len AS INT))")))
         .where(expr(
-          "CAST(conv(substring(md5(CAST(substring(text, i - 7, 8) AS BINARY)), 1, 4), 16, 10) AS BIGINT) % 64 = 0"))
+          s"${md5Bits("CAST(substring(text, i - 7, 8) AS BINARY)", 4)} % 64 = 0"))
         .select(col("doc_id"), col("i").cast("bigint").as("b"))
       val bounds = hashBounds
         .unionAll(docs.select(col("doc_id"), col("len").as("b")))
@@ -828,7 +826,7 @@ object LlmPrep extends Family {
           Window.partitionBy("doc_id").orderBy("pos")))
         .where(col("prev").isNotNull)
         .withColumn("green", expr(
-          "CAST(conv(substring(md5(concat(prev, '|', w)), 1, 8), 16, 10) AS BIGINT) % 4 = 0"))
+          s"${md5Bits("concat(prev, '|', w)", 8)} % 4 = 0"))
       bg.groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
           sum(when(col("green"), 1L).otherwise(0L)).as("n_green"))
@@ -852,13 +850,13 @@ object LlmPrep extends Family {
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .withColumn("n", size(col("t")).cast("bigint"))
         .withColumn("flags", expr(
-          """transform(sequence(0, CAST(n AS INT) - 1), i ->
-            |  CASE WHEN CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', CAST(i DIV 3 AS STRING))), 1, 8), 16, 10) AS BIGINT) % 8 = 0
+          s"""transform(sequence(0, CAST(n AS INT) - 1), i ->
+            |  CASE WHEN ${md5Bits("concat(CAST(doc_id AS STRING), ':', CAST(i DIV 3 AS STRING))", 8)} % 8 = 0
             |  THEN '1' ELSE '0' END)""".stripMargin))
         .withColumn("n_masked", expr("CAST(size(filter(flags, f -> f = '1')) AS BIGINT)"))
         .withColumn("n_spans", expr(
-          """CAST(size(filter(sequence(0, CAST((n + 2) DIV 3 AS INT) - 1), j ->
-            |  CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), ':', CAST(j AS STRING))), 1, 8), 16, 10) AS BIGINT) % 8 = 0)) AS BIGINT)""".stripMargin))
+          s"""CAST(size(filter(sequence(0, CAST((n + 2) DIV 3 AS INT) - 1), j ->
+            |  ${md5Bits("concat(CAST(doc_id AS STRING), ':', CAST(j AS STRING))", 8)} % 8 = 0)) AS BIGINT)""".stripMargin))
         .select(col("doc_id"), col("n").as("n_tokens"), col("n_masked"), col("n_spans"),
           expr("((n - n_masked) * 1000000) DIV n").as("visible_ppm"),
           md5(expr("CAST(array_join(flags, '') AS BINARY)")).as("mask_md5"))
@@ -1050,13 +1048,11 @@ object LlmPrep extends Family {
     // GPS rate in exact ppm, and the must_strip verdict any nonzero GPS
     // count flips. One scan, one rollup.
     "mm_exif_audit" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).where(col("doc_id") % 40 === 0)
         .select(col("doc_id"), col("source"))
-        .withColumn("orientation", expr(s"1 + ${u("eo")} % 8"))
-        .withColumn("has_gps", expr(s"${u("eg")} % 5 = 0"))
-        .withColumn("has_ts", expr(s"${u("et")} % 3 < 2"))
+        .withColumn("orientation", expr(s"1 + ${md5Bits("eo", "doc_id", 8)} % 8"))
+        .withColumn("has_gps", expr(s"${md5Bits("eg", "doc_id", 8)} % 5 = 0"))
+        .withColumn("has_ts", expr(s"${md5Bits("et", "doc_id", 8)} % 3 < 2"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_images"),
           sum(when(col("has_gps"), 1L).otherwise(0L)).as("n_gps"),
@@ -1086,7 +1082,7 @@ object LlmPrep extends Family {
         // row_number, no global sort at any scale.
         val t = Tables.documents(s, d)
           .select(col("doc_id"),
-            expr(s"CAST(conv(substring(md5(concat('$ep:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+            expr(md5Bits(ep.toString, "doc_id", 8))
               .as("u"))
           .withColumn("bkt", expr("u DIV 16777216"))
         val off = t.groupBy("bkt").agg(count(lit(1)).as("bc"))
@@ -1126,7 +1122,7 @@ object LlmPrep extends Family {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("n_tok"),
-          expr(UExpr).as("u"))
+          expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("bucket", col("u") % 32)
       val w = Window.partitionBy("bucket").orderBy("u", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1206,9 +1202,9 @@ object LlmPrep extends Family {
     "llm_calibration_error" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
-          expr("CAST(conv(substring(md5(concat('c:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000")
+          expr(s"${md5Bits("c", "doc_id", 8)} % 1000")
             .as("conf"),
-          expr("CAST(conv(substring(md5(concat('y:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000")
+          expr(s"${md5Bits("y", "doc_id", 8)} % 1000")
             .as("draw"))
         .withColumn("y", col("draw") < col("conf"))
         .withColumn("bucket", expr("conf DIV 100"))
@@ -1319,7 +1315,7 @@ object LlmPrep extends Family {
       val nVecs = Tables.embeddings(s, d).count()
       val mod = math.max(1L, math.sqrt(nVecs.toDouble).toLong)
       val cent = broadcast(vecs.where(
-        expr(s"CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % $mod = 0"))
+        expr(s"${md5Bits("CAST(vec_id AS STRING)", 8)} % $mod = 0"))
         .select(col("vec_id").as("cid"), col("xs").as("cs")))
       val assigned = vecs.crossJoin(cent)
         .select(col("vec_id"), col("cid"), expr(dot("xs", "cs")).as("dt"))
@@ -1391,14 +1387,12 @@ object LlmPrep extends Family {
     // rates, latency totals, all from the shared md5 randomness so the
     // oracle can replay arithmetically without JSON.
     "llm_tool_trace_audit" -> ((s, d) => {
-      def u(ns: String, k: Int) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING), ':$k')), 1, 8), 16, 10) AS BIGINT)"
       val calls = (0 to 2).map { k =>
         struct(
-          expr(s"CASE ${u("tool", k)} % 3 WHEN 0 THEN 'code' WHEN 1 THEN 'fetch' ELSE 'search' END")
+          expr(s"CASE ${md5Bits(s"concat('tool:', CAST(doc_id AS STRING), ':$k')", 8)} % 3 WHEN 0 THEN 'code' WHEN 1 THEN 'fetch' ELSE 'search' END")
             .as("tool"),
-          expr(s"IF(${u("st", k)} % 5 = 0, 'error', 'ok')").as("status"),
-          expr(s"${u("ms", k)} % 500").as("ms"))
+          expr(s"IF(${md5Bits(s"concat('st:', CAST(doc_id AS STRING), ':$k')", 8)} % 5 = 0, 'error', 'ok')").as("status"),
+          expr(s"${md5Bits(s"concat('ms:', CAST(doc_id AS STRING), ':$k')", 8)} % 500").as("ms"))
       }
       Tables.documents(s, d).where(col("doc_id") % 15 === 0)
         .select(col("doc_id"), to_json(array(calls: _*)).as("trace"))
@@ -1425,9 +1419,9 @@ object LlmPrep extends Family {
       val boxes = Tables.documents(s, d).where(col("doc_id") % 25 === 0)
         .select(col("doc_id"), explode(expr("sequence(0, 11)")).as("box"))
         .select(col("doc_id"), col("box"),
-          expr("CAST(conv(substring(md5(concat('x:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000")
+          expr(s"${md5Bits("concat('x:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))", 8)} % 1000")
             .as("x"),
-          expr("CAST(conv(substring(md5(concat('y:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1400")
+          expr(s"${md5Bits("concat('y:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))", 8)} % 1400")
             .as("y"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy(expr("y DIV 140"), col("x"), col("box"))
@@ -1478,10 +1472,10 @@ object LlmPrep extends Family {
   val oracles: Map[String, String] = unique(
     // Same md5 facets, same exposure ledger.
     "mm_exif_audit" ->
-      """WITH i AS (SELECT doc_id, source,
-        |    1 + ('0x' || substring(md5('eo:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 8 AS orientation,
-        |    ('0x' || substring(md5('eg:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 5 = 0 AS has_gps,
-        |    ('0x' || substring(md5('et:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 < 2 AS has_ts
+      s"""WITH i AS (SELECT doc_id, source,
+        |    1 + ${duckMd5Bits("eo", "doc_id", 8)} % 8 AS orientation,
+        |    ${duckMd5Bits("eg", "doc_id", 8)} % 5 = 0 AS has_gps,
+        |    ${duckMd5Bits("et", "doc_id", 8)} % 3 < 2 AS has_ts
         |  FROM documents WHERE doc_id % 40 = 0),
         |g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_images,
         |    CAST(SUM(CASE WHEN has_gps THEN 1 ELSE 0 END) AS BIGINT) AS n_gps,
@@ -1533,7 +1527,7 @@ object LlmPrep extends Family {
     "llm_pack_sequences" ->
       s"""WITH t AS (SELECT doc_id,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
          |  FROM documents),
          |b AS (SELECT *, u % 32 AS bucket FROM t),
          |c AS (SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY bucket ORDER BY u, doc_id
@@ -1564,8 +1558,8 @@ object LlmPrep extends Family {
         |FROM r ORDER BY doc_id""".stripMargin,
 
     "llm_sample_stratified" ->
-      """WITH t AS (SELECT lang,
-        |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u,
+      s"""WITH t AS (SELECT lang,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
         |    CASE WHEN lang = 'en' THEN 500 WHEN lang = 'de' THEN 250 ELSE 100 END AS rate_milli
         |  FROM documents)
         |SELECT lang, COUNT(*) AS n_total,
@@ -1635,8 +1629,8 @@ object LlmPrep extends Family {
         |ORDER BY doc_id, pr, pc""".stripMargin,
 
     "llm_sample_weighted" ->
-      """SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-        |  ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+      s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
+        |  ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 15)}
         |    // CAST(n_chars AS BIGINT) AS priority
         |FROM documents WHERE n_chars > 0
         |ORDER BY priority, doc_id LIMIT 50""".stripMargin,
@@ -1723,7 +1717,7 @@ object LlmPrep extends Family {
     // Bucketed byte-budget packing replayed with the same constants.
     "mm_shard_pack" ->
       s"""WITH t AS (SELECT doc_id, CAST(n_chars + $RecHeader AS BIGINT) AS bytes,
-         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
          |  FROM documents),
          |b AS (SELECT *, u % 8 AS bucket FROM t),
          |c AS (SELECT *, CAST(SUM(bytes) OVER (PARTITION BY bucket ORDER BY u, doc_id
@@ -1738,8 +1732,8 @@ object LlmPrep extends Family {
 
     // Same synthetic geometry, same integer resize/pad accounting.
     "mm_resolution_bucket" ->
-      """WITH g AS MATERIALIZED (SELECT doc_id,
-        |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+      s"""WITH g AS MATERIALIZED (SELECT doc_id,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
         |  FROM documents),
         |m AS (SELECT doc_id, 256 + (u % 8) * 128 AS w,
         |    256 + ((u // 8) % 8) * 128 AS h FROM g),
@@ -1771,8 +1765,8 @@ object LlmPrep extends Family {
     // Same WFQ virtual-time schedule, replayed with windows + QUALIFY-free
     // nesting (the limit is a plain ORDER BY ... LIMIT in DuckDB too).
     "llm_interleave_mixture" ->
-      """WITH g AS MATERIALIZED (SELECT doc_id, lang,
-        |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u,
+      s"""WITH g AS MATERIALIZED (SELECT doc_id, lang,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
         |    CAST(CASE lang WHEN 'en' THEN 5 WHEN 'es' THEN 3 WHEN 'de' THEN 3
         |      WHEN 'fr' THEN 2 ELSE 2 END AS BIGINT) AS wt
         |  FROM documents),
@@ -1786,8 +1780,8 @@ object LlmPrep extends Family {
 
     // Same weights, same per-stratum cumsum, same boundary-crossing rule.
     "llm_importance_resample" ->
-      """WITH t AS MATERIALIZED (SELECT doc_id, lang,
-        |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u,
+      s"""WITH t AS MATERIALIZED (SELECT doc_id, lang,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
         |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq
         |  FROM documents),
@@ -1809,12 +1803,12 @@ object LlmPrep extends Family {
     // Same 31-tile resize, 2-bit tile fingerprints, capped band buckets,
     // and exact-hamming verify.
     "mm_dedup_phash" ->
-      """WITH t AS MATERIALIZED (SELECT doc_id, text,
+      s"""WITH t AS MATERIALIZED (SELECT doc_id, text,
         |    CAST(length(text) AS BIGINT) AS len,
         |    (CAST(length(text) AS BIGINT) + 30) // 31 AS tl
         |  FROM documents WHERE length(text) >= 64),
         |b AS (SELECT doc_id,
-        |    ((('0x' || substring(md5(substring(text, CAST(i * tl AS INT) + 1, CAST(tl AS INT))), 1, 1))::BIGINT & 3) << (2 * i)) AS contrib
+        |    ((${duckMd5Bits("substring(text, CAST(i * tl AS INT) + 1, CAST(tl AS INT))", 1)} & 3) << (2 * i)) AS contrib
         |  FROM t, (SELECT unnest(range(0, 31)) AS i)),
         |ph AS MATERIALIZED (SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS ph
         |  FROM b GROUP BY 1),
@@ -1883,9 +1877,9 @@ object LlmPrep extends Family {
 
     // Same bucket/sign hash law, same signed-sum features.
     "llm_feature_hashing" ->
-      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+      s"""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
         |h AS (SELECT doc_id,
-        |    ('0x' || substring(md5(w), 1, 8))::BIGINT AS h FROM tk),
+        |    ${duckMd5Bits("w", 8)} AS h FROM tk),
         |f AS (SELECT doc_id, h % 16 AS bucket,
         |    CAST(CASE WHEN (h // 16) % 2 = 0 THEN 1 ELSE -1 END AS BIGINT) AS sgn
         |  FROM h)
@@ -1895,10 +1889,10 @@ object LlmPrep extends Family {
 
     // Same frame geometry, same 8-bit fingerprint, same lag threshold.
     "mm_scene_cut" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len
+      s"""WITH d AS (SELECT doc_id, text, length(text) AS len
         |  FROM documents WHERE doc_id % 20 = 0 AND length(text) >= 1),
         |f AS (SELECT doc_id, i AS frame_idx,
-        |    ('0x' || substring(md5(substring(text, i * 32 + 1, 32)), 1, 2))::BIGINT AS fp
+        |    ${duckMd5Bits("substring(text, i * 32 + 1, 32)", 2)} AS fp
         |  FROM d, LATERAL (SELECT unnest(range(0, CAST((len + 31) // 32 AS INT))) AS i)),
         |l AS (SELECT doc_id, frame_idx, fp,
         |    LAG(fp) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev_fp
@@ -1937,11 +1931,11 @@ object LlmPrep extends Family {
 
     // Same rolling-window boundary law, same lag-spanned chunks.
     "llm_cdc_chunk" ->
-      """WITH d AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len
+      s"""WITH d AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len
         |  FROM documents WHERE doc_id % 10 = 5 AND length(text) >= 8),
         |hb AS (SELECT doc_id, CAST(i AS BIGINT) AS b
         |  FROM d, LATERAL (SELECT unnest(range(8, CAST(len AS INT) + 1)) AS i)
-        |  WHERE ('0x' || substring(md5(substring(text, CAST(i - 7 AS INT), 8)), 1, 4))::BIGINT % 64 = 0),
+        |  WHERE ${duckMd5Bits("substring(text, CAST(i - 7 AS INT), 8)", 4)} % 64 = 0),
         |bounds AS (SELECT DISTINCT doc_id, b FROM
         |  (SELECT doc_id, b FROM hb UNION ALL SELECT doc_id, len FROM d)),
         |sp AS (SELECT doc_id, b,
@@ -1959,7 +1953,7 @@ object LlmPrep extends Family {
     // Both graded pipelines replayed (llm_sim_topk's exact scan and
     // llm_sim_ann's IVF search), then the same left-join recall rollup.
     "llm_ann_recall" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
         |exact AS (SELECT probe_id, neighbor_id FROM (
         |  SELECT probe_id, vec_id AS neighbor_id,
@@ -1969,7 +1963,7 @@ object LlmPrep extends Family {
         |  WHERE rnk <= 5),
         |st AS (SELECT COUNT(*) AS n_tot FROM e),
         |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
-        |         WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT * 1.0
+        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
         |               < 4294967296.0 / sqrt(n_tot * 1.0)),
         |assigned AS (
         |  SELECT vec_id, emb, cluster FROM (
@@ -2001,7 +1995,7 @@ object LlmPrep extends Family {
 
     // Same bigram hash, same sqrt z, same integer verdict.
     "llm_watermark_detect" ->
-      """WITH tk AS (SELECT doc_id, w, pos FROM (
+      s"""WITH tk AS (SELECT doc_id, w, pos FROM (
         |    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
         |      generate_subscripts(string_split(text, ' '), 1) AS pos
         |    FROM documents)),
@@ -2010,7 +2004,7 @@ object LlmPrep extends Family {
         |  FROM tk),
         |g AS (SELECT doc_id,
         |    CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-        |    CAST(SUM(CASE WHEN ('0x' || substring(md5(prev || '|' || w), 1, 8))::BIGINT % 4 = 0
+        |    CAST(SUM(CASE WHEN ${duckMd5Bits("prev || '|' || w", 8)} % 4 = 0
         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_green
         |  FROM bg WHERE prev IS NOT NULL GROUP BY 1)
         |SELECT doc_id, n_bigrams, n_green,
@@ -2021,17 +2015,17 @@ object LlmPrep extends Family {
 
     // Same block-hash mask law, same flag-string fingerprint.
     "llm_span_corruption" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
         |  FROM documents WHERE doc_id % 10 = 7),
         |f AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n,
         |    list_transform(range(0, len(t)), i ->
-        |      CASE WHEN ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(i // 3 AS VARCHAR)), 1, 8))::BIGINT % 8 = 0
+        |      CASE WHEN ${duckMd5Bits("CAST(doc_id AS VARCHAR) || ':' || CAST(i // 3 AS VARCHAR)", 8)} % 8 = 0
         |      THEN '1' ELSE '0' END) AS flags
         |  FROM d),
         |m AS (SELECT doc_id, n, flags,
         |    CAST(len(list_filter(flags, f -> f = '1')) AS BIGINT) AS n_masked,
         |    CAST(len(list_filter(range(0, CAST((n + 2) // 3 AS INT)), j ->
-        |      ('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)), 1, 8))::BIGINT % 8 = 0)) AS BIGINT) AS n_spans
+        |      ${duckMd5Bits("CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)} % 8 = 0)) AS BIGINT) AS n_spans
         |  FROM f)
         |SELECT doc_id, n AS n_tokens, n_masked, n_spans,
         |  ((n - n_masked) * 1000000) // n AS visible_ppm,
@@ -2161,9 +2155,9 @@ object LlmPrep extends Family {
     // Same md5(epoch:doc) shuffle order, same round-robin mod-4 sharding,
     // same whole-batch trim — integer end to end.
     "llm_dataloader_epoch_plan" ->
-      """WITH e AS (SELECT 0 AS epoch UNION ALL SELECT 1),
+      s"""WITH e AS (SELECT 0 AS epoch UNION ALL SELECT 1),
         |s AS (SELECT epoch, doc_id,
-        |    ('0x' || substring(md5(CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+        |    ${duckMd5Bits("CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 8)} AS u
         |  FROM documents, e),
         |p AS (SELECT epoch, doc_id,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY epoch ORDER BY u, doc_id) AS BIGINT) - 1 AS pos
@@ -2182,7 +2176,7 @@ object LlmPrep extends Family {
     "llm_attention_block_savings" ->
       s"""WITH t AS (SELECT doc_id,
          |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
          |  FROM documents),
          |b AS (SELECT *, u % 32 AS bucket FROM t),
          |c AS (SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY bucket ORDER BY u, doc_id
@@ -2237,9 +2231,9 @@ object LlmPrep extends Family {
     // Same two independent md5 draws, same decile buckets, same integer
     // milli gaps.
     "llm_calibration_error" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('c:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS conf,
-        |    ('0x' || substring(md5('y:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS draw
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("c", "doc_id", 8)} % 1000 AS conf,
+        |    ${duckMd5Bits("y", "doc_id", 8)} % 1000 AS draw
         |  FROM documents),
         |b AS (SELECT conf // 100 AS bucket, conf, draw < conf AS y FROM t),
         |g AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
@@ -2267,7 +2261,7 @@ object LlmPrep extends Family {
     // The whole IVF-PQ pipeline replayed: same micro dims, same PQ grid,
     // same md5 centroids, same integer dots, same (qdot, id) top-3.
     "llm_ann_ivf_pq" ->
-      """WITH e AS (SELECT vec_id,
+      s"""WITH e AS (SELECT vec_id,
         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS xm,
         |    generate_subscripts(embedding, 1) - 1 AS pos
         |  FROM embeddings),
@@ -2277,7 +2271,7 @@ object LlmPrep extends Family {
         |      ELSE ((xm - mn) * 15) // (mx - mn) END) * (mx - mn)) // 15 AS deq
         |  FROM e JOIN st ON e.pos = st.pos),
         |cent AS (SELECT vec_id AS cid, pos, xm AS cm FROM e
-        |  WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+        |  WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)}
         |    % (SELECT GREATEST(1, CAST(FLOOR(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT))
         |       FROM embeddings) = 0),
         |adot AS (SELECT e.vec_id, c.cid,
@@ -2339,13 +2333,13 @@ object LlmPrep extends Family {
     // The trace arithmetic replayed without JSON (the roundtrip is the
     // Spark-side claim; the numbers are the shared md5 randomness).
     "llm_tool_trace_audit" ->
-      """WITH k AS (SELECT unnest([0, 1, 2]) AS k),
+      s"""WITH k AS (SELECT unnest([0, 1, 2]) AS k),
         |c AS (SELECT doc_id, k.k,
-        |    CASE ('0x' || substring(md5('tool:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)), 1, 8))::BIGINT % 3
+        |    CASE ${duckMd5Bits("'tool:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)", 8)} % 3
         |      WHEN 0 THEN 'code' WHEN 1 THEN 'fetch' ELSE 'search' END AS tool,
-        |    CASE WHEN ('0x' || substring(md5('st:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)), 1, 8))::BIGINT % 5 = 0
+        |    CASE WHEN ${duckMd5Bits("'st:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)", 8)} % 5 = 0
         |      THEN 'error' ELSE 'ok' END AS status,
-        |    ('0x' || substring(md5('ms:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)), 1, 8))::BIGINT % 500 AS ms
+        |    ${duckMd5Bits("'ms:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)", 8)} % 500 AS ms
         |  FROM documents, k WHERE doc_id % 15 = 0)
         |SELECT tool, CAST(COUNT(*) AS BIGINT) AS n_calls,
         |  CAST(SUM(CASE WHEN status = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
@@ -2354,11 +2348,11 @@ object LlmPrep extends Family {
 
     // Same md5 coordinates, same (band, x, box) order, same checksum.
     "mm_layout_reading_order" ->
-      """WITH pg AS (SELECT doc_id, unnest(range(0, 12)) AS box
+      s"""WITH pg AS (SELECT doc_id, unnest(range(0, 12)) AS box
         |  FROM documents WHERE doc_id % 25 = 0),
         |b AS (SELECT doc_id, box,
-        |    ('0x' || substring(md5('x:' || CAST(doc_id AS VARCHAR) || ':' || CAST(box AS VARCHAR)), 1, 8))::BIGINT % 1000 AS x,
-        |    ('0x' || substring(md5('y:' || CAST(doc_id AS VARCHAR) || ':' || CAST(box AS VARCHAR)), 1, 8))::BIGINT % 1400 AS y
+        |    ${duckMd5Bits("'x:' || CAST(doc_id AS VARCHAR) || ':' || CAST(box AS VARCHAR)", 8)} % 1000 AS x,
+        |    ${duckMd5Bits("'y:' || CAST(doc_id AS VARCHAR) || ':' || CAST(box AS VARCHAR)", 8)} % 1400 AS y
         |  FROM pg),
         |r AS (SELECT doc_id, box, y // 140 AS band,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY y // 140, x, box) AS BIGINT) AS rnk

@@ -67,12 +67,10 @@ object LlmScale extends Family {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
         .localCheckpoint()
       val mx = docs.agg(max("doc_id").as("max_id"))
-      def u(k: Int) =
-        s"CAST(conv(substring(md5(concat('rc$k:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val cites = docs.where(col("doc_id") % 7 === 0)
         .crossJoin(broadcast(mx))
         .select(col("doc_id").as("ans_id"), col("source").as("ans_source"),
-          array((1 to 3).map(k => expr(s"${u(k)} % (max_id * 5 DIV 4 + 1)")): _*).as("cs"))
+          array((1 to 3).map(k => expr(s"${md5Bits(s"rc$k", "doc_id", 8)} % (max_id * 5 DIV 4 + 1)")): _*).as("cs"))
         .select(col("ans_id"), col("ans_source"), explode(col("cs")).as("cited_id"))
       val checked = cites
         .join(docs.select(col("doc_id").as("cited_id"),
@@ -175,11 +173,9 @@ object LlmScale extends Family {
     // digit-class pattern identical in Java regex and RE2), graded
     // against the gold in exact ppm.
     "llm_answer_extract_eval" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("gold", expr(s"${u("aeg")} % 1000"))
-        .withColumn("pred_val", expr(s"IF(${u("aew")} % 10 = 0, gold + 1, gold)"))
+        .withColumn("gold", expr(s"${md5Bits("aeg", "doc_id", 8)} % 1000"))
+        .withColumn("pred_val", expr(s"IF(${md5Bits("aew", "doc_id", 8)} % 10 = 0, gold + 1, gold)"))
         .withColumn("ans", expr(
           """concat('Given 42 apples and 17 pears, the answer is ',
              IF(doc_id % 3 = 0, '$', ''), CAST(pred_val AS STRING), '.')"""))
@@ -202,14 +198,12 @@ object LlmScale extends Family {
     // regex dialect) is itself exercised; per-class ppm + the
     // calibration verdict.
     "llm_refusal_audit" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).select(col("doc_id"))
         .withColumn("harmful", expr("IF(doc_id % 5 = 0, 1, 0)"))
         .withColumn("refuses", expr(
-          s"IF(harmful = 1, IF(${u("rfh")} % 10 < 9, 1, 0), IF(${u("rfb")} % 100 < 5, 1, 0))"))
+          s"IF(harmful = 1, IF(${md5Bits("rfh", "doc_id", 8)} % 10 < 9, 1, 0), IF(${md5Bits("rfb", "doc_id", 8)} % 100 < 5, 1, 0))"))
         .withColumn("resp", expr(
-          s"""CASE WHEN refuses = 1 AND ${u("rfp")} % 2 = 0
+          s"""CASE WHEN refuses = 1 AND ${md5Bits("rfp", "doc_id", 8)} % 2 = 0
                 THEN 'I cannot help with that request.'
               WHEN refuses = 1 THEN 'I am unable to comply with this.'
               ELSE concat('Sure, here is the answer: ', CAST(doc_id AS STRING)) END"""))
@@ -241,7 +235,7 @@ object LlmScale extends Family {
         .crossJoin(broadcast(Tables.documents(s, d).sparkSession
           .range(0, 5).select(col("id").as("model"))))
         .withColumn("score", expr(
-          """CAST(conv(substring(md5(concat('lb:', CAST(model AS STRING), ':', CAST(task AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000
+          s"""${md5Bits("concat('lb:', CAST(model AS STRING), ':', CAST(task AS STRING))", 8)} % 1000
              + model * 600"""))
         .localCheckpoint()
       val wins = sc.as("a").join(sc.as("b"),
@@ -301,7 +295,7 @@ object LlmScale extends Family {
     "llm_rope_scaling_plan" -> ((s, d) => {
       val demands = Tables.documents(s, d)
         .select(expr("CAST(length(text) DIV 4 AS BIGINT)").as("toks"),
-          expr("1 + CAST(conv(substring(md5(concat('rope:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 512").as("mult"))
+          expr(s"1 + ${md5Bits("rope", "doc_id", 8)} % 512").as("mult"))
         .select(expr("toks * mult").as("demand"))
       val targets = demands.sparkSession.range(0, 4).select(
         expr("element_at(array(CAST(8192 AS BIGINT), CAST(16384 AS BIGINT), CAST(32768 AS BIGINT), CAST(131072 AS BIGINT)), CAST(id + 1 AS INT))").as("target_ctx"))
@@ -521,7 +515,7 @@ object LlmScale extends Family {
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("tok"),
-          expr("CAST(conv(substring(md5(concat('cap:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+          expr(md5Bits("cap", "doc_id", 8))
             .as("u"))
         .withColumn("rn", row_number().over(w).cast("bigint"))
         .groupBy("source")
@@ -586,9 +580,9 @@ object LlmScale extends Family {
     // DECIMAL(38,0) cross-multiplication; flag at 1.5×.
     "llm_moe_balance" -> ((s, d) => {
       val route = expr(
-        """CASE WHEN CAST(conv(substring(md5(concat('rt:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100 < 40
+        s"""CASE WHEN ${md5Bits("rt", "doc_id", 8)} % 100 < 40
           THEN CAST(0 AS BIGINT)
-          ELSE (CAST(conv(substring(md5(concat('rt:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) DIV 100) % 8 END""")
+          ELSE (${md5Bits("rt", "doc_id", 8)} DIV 100) % 8 END""")
       val c = Tables.documents(s, d)
         .select(route.as("expert"))
         .groupBy("expert").agg(count(lit(1)).as("c"))
@@ -615,9 +609,9 @@ object LlmScale extends Family {
         .partitionBy("grp").orderBy(col("rel"), col("doc_id"))
       Tables.documents(s, d)
         .select(col("doc_id"), expr("doc_id DIV 20").as("grp"),
-          expr("CAST(conv(substring(md5(concat('sc:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+          expr(md5Bits("sc", "doc_id", 8))
             .as("score"),
-          expr("CAST(conv(substring(md5(concat('rel:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+          expr(md5Bits("rel", "doc_id", 8))
             .as("rel"))
         .withColumn("rnk", row_number().over(w).cast("bigint"))
         .withColumn("rel_rn", row_number().over(wRel))
@@ -639,13 +633,11 @@ object LlmScale extends Family {
     // scrambles training targets silently — the hash catches it).
     // Conservation: rendered length = len + 15 marker chars.
     "llm_fim_transform" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.documents(s, d).where(col("doc_id") % 6 === 2)
         .select(col("doc_id"), col("text"),
           length(col("text")).cast("bigint").as("len"))
-        .withColumn("cut1", expr(s"(len * (${u("f1")} % 500)) DIV 1000"))
-        .withColumn("cut2", expr(s"cut1 + (len * (${u("f2")} % 400)) DIV 1000"))
+        .withColumn("cut1", expr(s"(len * (${md5Bits("f1", "doc_id", 8)} % 500)) DIV 1000"))
+        .withColumn("cut2", expr(s"cut1 + (len * (${md5Bits("f2", "doc_id", 8)} % 400)) DIV 1000"))
         .withColumn("rendered", expr(
           """concat('<PRE>', substring(text, 1, CAST(cut1 AS INT)),
              '<SUF>', substring(text, CAST(cut2 AS INT) + 1),
@@ -721,7 +713,7 @@ object LlmScale extends Family {
       val needle = "THE-NEEDLE-7391"
       Tables.documents(s, d).where(col("doc_id") % 8 === 1)
         .select(col("doc_id"), col("text"),
-          expr("CAST(conv(substring(md5(concat('nd:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 11")
+          expr(s"${md5Bits("nd", "doc_id", 8)} % 11")
             .as("depth"))
         .withColumn("len", length(col("text")).cast("bigint"))
         .withColumn("off", expr("(len * depth) DIV 10"))
@@ -781,7 +773,7 @@ object LlmScale extends Family {
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("toks"),
           size(array_distinct(split(col("text"), " "))).cast("bigint").as("uniq"),
-          expr("CAST(conv(substring(md5(concat('sem:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+          expr(md5Bits("sem", "doc_id", 8))
             .as("semv"))
         .withColumn("lex", expr("(uniq * 1000) DIV toks"))
         .withColumn("bsem", expr("semv DIV 16777216"))
@@ -842,7 +834,7 @@ object LlmScale extends Family {
     // lengths; mean in exact milli.
     "llm_spec_decode_accept" -> ((s, d) => {
       def draw(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING), ':', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 4"
+        s"${md5Bits(s"concat('$ns:', CAST(doc_id AS STRING), ':', CAST(k AS STRING))", 8)} % 4"
       Tables.documents(s, d).where(col("doc_id") % 10 === 7)
         .select(col("doc_id"),
           expr(s"""transform(sequence(0, 7), k -> (${draw("draft")}) = (${draw("tgt")}))""")
@@ -865,7 +857,7 @@ object LlmScale extends Family {
     "llm_grpo_advantage" -> ((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), expr("doc_id DIV 8").as("grp"),
-          expr("CAST(conv(substring(md5(concat('rw:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000")
+          expr(s"${md5Bits("rw", "doc_id", 8)} % 1000")
             .as("r"))
         .withColumn("n", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("grp")))
@@ -896,7 +888,7 @@ object LlmScale extends Family {
         " WHEN 7 THEN 21 WHEN 6 THEN 6 WHEN 5 THEN 1 ELSE 0 END"
       Tables.documents(s, d).where(col("doc_id") % 20 === 5)
         .select(col("doc_id"),
-          expr("CAST(conv(substring(md5(concat('pass:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 11")
+          expr(s"${md5Bits("pass", "doc_id", 8)} % 11")
             .as("c"))
         .withColumn("pass_at_5_ppm",
           expr(s"((252 - ($binom)) * 1000000) DIV 252"))
@@ -921,7 +913,7 @@ object LlmScale extends Family {
       val t = Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("tok"),
-          expr("CAST(conv(substring(md5(concat('split:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)")
+          expr(md5Bits("split", "doc_id", 8))
             .as("u"))
         .withColumn("bkt", expr("u DIV 16777216"))
       val total = t.agg(coalesce(
@@ -1045,12 +1037,11 @@ object LlmScale extends Family {
   val oracles: Map[String, String] = unique(
     // Same 1.25×-span citations, same existence join, same ppms.
     "llm_rag_citation_check" ->
-      """WITH mx AS (SELECT MAX(doc_id) AS max_id FROM documents),
+      s"""WITH mx AS (SELECT MAX(doc_id) AS max_id FROM documents),
         |a AS (SELECT doc_id AS ans_id, source AS ans_source
         |  FROM documents WHERE doc_id % 7 = 0),
         |c AS (SELECT ans_id, ans_source,
-        |    ('0x' || substring(md5('rc' || CAST(k AS VARCHAR) || ':'
-        |      || CAST(ans_id AS VARCHAR)), 1, 8))::BIGINT
+        |    ${duckMd5Bits("'rc' || CAST(k AS VARCHAR) || ':' || CAST(ans_id AS VARCHAR)", 8)}
         |      % (max_id * 5 // 4 + 1) AS cited_id
         |  FROM a CROSS JOIN mx CROSS JOIN (SELECT UNNEST([1, 2, 3]) AS k)),
         |j AS (SELECT c.ans_id, c.cited_id,
@@ -1096,15 +1087,15 @@ object LlmScale extends Family {
 
     // Same synthetic sentences, same last-number extraction contract.
     "llm_answer_extract_eval" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('aeg:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS gold
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("aeg", "doc_id", 8)} % 1000 AS gold
         |  FROM documents),
         |p AS (SELECT doc_id, gold,
-        |    CASE WHEN ('0x' || substring(md5('aew:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 = 0
+        |    CASE WHEN ${duckMd5Bits("aew", "doc_id", 8)} % 10 = 0
         |      THEN gold + 1 ELSE gold END AS pred_val FROM t),
         |a AS (SELECT gold,
         |    'Given 42 apples and 17 pears, the answer is '
-        |      || CASE WHEN doc_id % 3 = 0 THEN '$' ELSE '' END
+        |      || CASE WHEN doc_id % 3 = 0 THEN '$$' ELSE '' END
         |      || CAST(pred_val AS VARCHAR) || '.' AS ans FROM p),
         |x AS (SELECT gold,
         |    CAST(list_extract(regexp_extract_all(ans, '[0-9]+'),
@@ -1119,17 +1110,17 @@ object LlmScale extends Family {
 
     // Same two-phrase plant, same substring-identity detector.
     "llm_refusal_audit" ->
-      """WITH t AS (SELECT doc_id,
+      s"""WITH t AS (SELECT doc_id,
         |    CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS harmful
         |  FROM documents),
         |r AS (SELECT doc_id, harmful,
         |    CASE WHEN harmful = 1
-        |      THEN CASE WHEN ('0x' || substring(md5('rfh:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 9 THEN 1 ELSE 0 END
-        |      ELSE CASE WHEN ('0x' || substring(md5('rfb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 5 THEN 1 ELSE 0 END
+        |      THEN CASE WHEN ${duckMd5Bits("rfh", "doc_id", 8)} % 10 < 9 THEN 1 ELSE 0 END
+        |      ELSE CASE WHEN ${duckMd5Bits("rfb", "doc_id", 8)} % 100 < 5 THEN 1 ELSE 0 END
         |    END AS refuses
         |  FROM t),
         |s AS (SELECT *,
-        |    CASE WHEN refuses = 1 AND ('0x' || substring(md5('rfp:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 = 0
+        |    CASE WHEN refuses = 1 AND ${duckMd5Bits("rfp", "doc_id", 8)} % 2 = 0
         |      THEN 'I cannot help with that request.'
         |      WHEN refuses = 1 THEN 'I am unable to comply with this.'
         |      ELSE 'Sure, here is the answer: ' || CAST(doc_id AS VARCHAR) END AS resp
@@ -1178,11 +1169,11 @@ object LlmScale extends Family {
 
     // Same planted scores, same pairwise wins, same dense order.
     "llm_leaderboard" ->
-      """WITH t AS (SELECT doc_id AS task FROM documents WHERE doc_id < 8),
+      s"""WITH t AS (SELECT doc_id AS task FROM documents WHERE doc_id < 8),
         |m(model) AS (VALUES (CAST(0 AS BIGINT)), (CAST(1 AS BIGINT)),
         |  (CAST(2 AS BIGINT)), (CAST(3 AS BIGINT)), (CAST(4 AS BIGINT))),
         |sc AS (SELECT task, model,
-        |    ('0x' || substring(md5('lb:' || CAST(model AS VARCHAR) || ':' || CAST(task AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    ${duckMd5Bits("'lb:' || CAST(model AS VARCHAR) || ':' || CAST(task AS VARCHAR)", 8)} % 1000
         |      + model * 600 AS score
         |  FROM t CROSS JOIN m),
         |w AS (SELECT a.model, CAST(SUM(CASE WHEN a.score > b.score THEN 1 ELSE 0 END) AS BIGINT) AS wins,
@@ -1220,8 +1211,8 @@ object LlmScale extends Family {
 
     // Same planted demands, same target grid, same integer ledger.
     "llm_rope_scaling_plan" ->
-      """WITH dm AS (SELECT (length(text) // 4)
-        |      * (1 + ('0x' || substring(md5('rope:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 512) AS demand
+      s"""WITH dm AS (SELECT (length(text) // 4)
+        |      * (1 + ${duckMd5Bits("rope", "doc_id", 8)} % 512) AS demand
         |  FROM documents),
         |tg(target_ctx) AS (VALUES (CAST(8192 AS BIGINT)), (CAST(16384 AS BIGINT)),
         |  (CAST(32768 AS BIGINT)), (CAST(131072 AS BIGINT)))
@@ -1308,7 +1299,7 @@ object LlmScale extends Family {
     "llm_dedup_embed_lsh" ->
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
          |pw AS (SELECT p, k,
-         |    ((('0x' || substring(md5(CAST(p AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 2001) - 1000) / 1000.0 AS w
+         |    ((${duckMd5Bits("CAST(p AS VARCHAR) || ':' || CAST(k AS VARCHAR)", 8)} % 2001) - 1000) / 1000.0 AS w
          |  FROM generate_series(0, 127) t(p), generate_series(0, ${SrpDims - 1}) u(k)),
          |planes AS (SELECT p, list(w ORDER BY k) AS wv FROM pw GROUP BY p),
          |bits AS (SELECT vec_id, p,
@@ -1376,10 +1367,10 @@ object LlmScale extends Family {
 
     // Same planted routing, same cross-multiplied imbalance factor.
     "llm_moe_balance" ->
-      """WITH t AS (SELECT CASE
-        |    WHEN ('0x' || substring(md5('rt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 40
+      s"""WITH t AS (SELECT CASE
+        |    WHEN ${duckMd5Bits("rt", "doc_id", 8)} % 100 < 40
         |    THEN CAST(0 AS BIGINT)
-        |    ELSE (('0x' || substring(md5('rt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT // 100) % 8 END
+        |    ELSE (${duckMd5Bits("rt", "doc_id", 8)} // 100) % 8 END
         |      AS expert
         |  FROM documents),
         |c AS (SELECT expert, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY expert),
@@ -1394,9 +1385,9 @@ object LlmScale extends Family {
 
     // Same group construction, same LCM-exact reciprocal ranks.
     "llm_retrieval_mrr" ->
-      """WITH t AS (SELECT doc_id, doc_id // 20 AS grp,
-        |    ('0x' || substring(md5('sc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS score,
-        |    ('0x' || substring(md5('rel:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS rel
+      s"""WITH t AS (SELECT doc_id, doc_id // 20 AS grp,
+        |    ${duckMd5Bits("sc", "doc_id", 8)} AS score,
+        |    ${duckMd5Bits("rel", "doc_id", 8)} AS rel
         |  FROM documents),
         |r AS (SELECT *,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY grp ORDER BY score DESC, doc_id) AS BIGINT) AS rnk,
@@ -1415,10 +1406,10 @@ object LlmScale extends Family {
 
     // Same cuts, same PSM ordering, same conservation law.
     "llm_fim_transform" ->
-      """WITH t AS (SELECT doc_id, text,
+      s"""WITH t AS (SELECT doc_id, text,
         |    CAST(length(text) AS BIGINT) AS len,
-        |    ('0x' || substring(md5('f1:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 500 AS u1,
-        |    ('0x' || substring(md5('f2:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 400 AS u2
+        |    ${duckMd5Bits("f1", "doc_id", 8)} % 500 AS u1,
+        |    ${duckMd5Bits("f2", "doc_id", 8)} % 400 AS u2
         |  FROM documents WHERE doc_id % 6 = 2),
         |c AS (SELECT doc_id, text, len,
         |    (len * u1) // 1000 AS cut1,
@@ -1473,8 +1464,8 @@ object LlmScale extends Family {
 
     // Same depth draw, same splice arithmetic, same conservation law.
     "llm_needle_gen" ->
-      """WITH t AS (SELECT doc_id, text,
-        |    ('0x' || substring(md5('nd:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 11 AS depth,
+      s"""WITH t AS (SELECT doc_id, text,
+        |    ${duckMd5Bits("nd", "doc_id", 8)} % 11 AS depth,
         |    CAST(length(text) AS BIGINT) AS len
         |  FROM documents WHERE doc_id % 8 = 1),
         |s AS (SELECT *, (len * depth) // 10 AS off,
@@ -1509,10 +1500,10 @@ object LlmScale extends Family {
 
     // Same two rank windows, same integer RRF surrogate, same top-10.
     "llm_rrf_fusion" ->
-      """WITH t AS (SELECT doc_id,
+      s"""WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
         |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq,
-        |    ('0x' || substring(md5('sem:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS semv
+        |    ${duckMd5Bits("sem", "doc_id", 8)} AS semv
         |  FROM documents WHERE doc_id % 5 = 0),
         |l AS (SELECT *, (uniq * 1000) // toks AS lex FROM t),
         |r AS (SELECT doc_id,
@@ -1542,10 +1533,10 @@ object LlmScale extends Family {
 
     // Same two md5 streams, same first-mismatch CASE.
     "llm_spec_decode_accept" ->
-      """WITH t AS (SELECT doc_id,
+      s"""WITH t AS (SELECT doc_id,
         |    list_transform(range(0, 8), k ->
-        |      ('0x' || substring(md5('draft:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 4
-        |      = ('0x' || substring(md5('tgt:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 4)
+        |      ${duckMd5Bits("'draft:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)", 8)} % 4
+        |      = ${duckMd5Bits("'tgt:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k AS VARCHAR)", 8)} % 4)
         |      AS matches
         |  FROM documents WHERE doc_id % 10 = 7),
         |p AS (SELECT doc_id, list_position(matches, false) AS pos FROM t),
@@ -1556,8 +1547,8 @@ object LlmScale extends Family {
 
     // Same cross-multiplied advantages, same sign-safe milli division.
     "llm_grpo_advantage" ->
-      """WITH t AS (SELECT doc_id, doc_id // 8 AS grp,
-        |    ('0x' || substring(md5('rw:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000 AS r
+      s"""WITH t AS (SELECT doc_id, doc_id // 8 AS grp,
+        |    ${duckMd5Bits("rw", "doc_id", 8)} % 1000 AS r
         |  FROM documents),
         |w AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY grp) AS BIGINT) AS n,
         |    CAST(SUM(r) OVER (PARTITION BY grp) AS BIGINT) AS sr
@@ -1588,8 +1579,8 @@ object LlmScale extends Family {
 
     // Same md5 draw, same 6-entry binomial lookup, same exact ppm.
     "llm_pass_at_k" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('pass:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 11 AS c
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("pass", "doc_id", 8)} % 11 AS c
         |  FROM documents WHERE doc_id % 20 = 5),
         |p AS (SELECT c,
         |    CAST(((252 - (CASE 10 - c WHEN 10 THEN 252 WHEN 9 THEN 126 WHEN 8 THEN 56
@@ -1601,9 +1592,9 @@ object LlmScale extends Family {
 
     // Same md5 lottery rank, same start-based budget cut.
     "llm_domain_cap" ->
-      """WITH t AS (SELECT doc_id, source,
+      s"""WITH t AS (SELECT doc_id, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-        |    ('0x' || substring(md5('cap:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+        |    ${duckMd5Bits("cap", "doc_id", 8)} AS u
         |  FROM documents),
         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY u, doc_id) AS BIGINT) AS rn
         |  FROM t)
@@ -1615,9 +1606,9 @@ object LlmScale extends Family {
 
     // Same lottery order, same start-based 80/10/10 cut, same exact ppm.
     "llm_token_budget_split" ->
-      """WITH t AS (SELECT doc_id,
+      s"""WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-        |    ('0x' || substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+        |    ${duckMd5Bits("split", "doc_id", 8)} AS u
         |  FROM documents),
         |tt AS (SELECT CAST(SUM(tok::HUGEINT) AS BIGINT) AS total FROM t),
         |c AS (SELECT doc_id, tok,

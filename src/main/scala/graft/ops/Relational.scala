@@ -1140,8 +1140,8 @@ object Relational extends Family {
       // Δ at 10× — the md5 scatter is genuinely uniform and replayable.
       val pts = Tables.part(s, d).select(
         col("p_partkey").as("id"),
-        expr("CAST(conv(substring(md5(concat('x:', CAST(p_partkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100000").as("x"),
-        expr("CAST(conv(substring(md5(concat('y:', CAST(p_partkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100000").as("y"))
+        expr(s"${md5Bits("x", "p_partkey", 8)} % 100000").as("x"),
+        expr(s"${md5Bits("y", "p_partkey", 8)} % 100000").as("y"))
       val build = pts
         .withColumn("cx", expr(s"x DIV $eps"))
         .withColumn("cy", expr(s"y DIV $eps"))
@@ -1937,9 +1937,9 @@ object Relational extends Family {
     // within eps, by brute force — the grid plan must produce exactly
     // the brute-force answer.
     "join_spatial_grid" ->
-      """WITH p AS (SELECT p_partkey AS id,
-        |    ('0x' || substring(md5('x:' || CAST(p_partkey AS VARCHAR)), 1, 8))::BIGINT % 100000 AS x,
-        |    ('0x' || substring(md5('y:' || CAST(p_partkey AS VARCHAR)), 1, 8))::BIGINT % 100000 AS y
+      s"""WITH p AS (SELECT p_partkey AS id,
+        |    ${duckMd5Bits("x", "p_partkey", 8)} % 100000 AS x,
+        |    ${duckMd5Bits("y", "p_partkey", 8)} % 100000 AS y
         |  FROM part)
         |SELECT a.id AS a_id, b.id AS b_id,
         |  CAST((a.x - b.x)*(a.x - b.x) + (a.y - b.y)*(a.y - b.y) AS BIGINT) AS d2

@@ -12,8 +12,6 @@ import graft.Tables
   * discipline as every other family.
   */
 object Round11Ops extends Family {
-  private def u(ns: String, id: String = "doc_id") =
-    s"CAST(conv(substring(md5(concat('$ns:', CAST($id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
 
   val queries: Map[String, Q] = unique(
     // Bucket PRUNING — the read-side payoff sink_bucketed's layout buys
@@ -121,8 +119,8 @@ object Round11Ops extends Family {
     // positive-rate baseline 5×.
     "agg_auc_pr" -> ((s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("truth", expr(s"IF(${u("apt")} % 10 = 0, 1, 0)"))
-        .withColumn("score", expr(s"${u("aps")} % 700000 + truth * 300000"))
+        .withColumn("truth", expr(s"IF(${md5Bits("apt", "doc_id", 8)} % 10 = 0, 1, 0)"))
+        .withColumn("score", expr(s"${md5Bits("aps", "doc_id", 8)} % 700000 + truth * 300000"))
       val grid = t.crossJoin(broadcast(s.range(1, 20).select((lit(1000000L) - col("id") * 50000L).as("thr"))))
         .groupBy("thr")
         .agg(sum(when(col("truth") === 1 && col("score") >= col("thr"), 1L)
@@ -152,8 +150,8 @@ object Round11Ops extends Family {
     // v > m guard graded as its own boolean.
     "agg_negbin_moments" -> ((s, d) => {
       Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("g", expr(s"${u("nbg")} % 3"))
-        .withColumn("x", expr(s"${u("nbx")} % (2 + 3 * g)"))
+        .withColumn("g", expr(s"${md5Bits("nbg", "doc_id", 8)} % 3"))
+        .withColumn("x", expr(s"${md5Bits("nbx", "doc_id", 8)} % (2 + 3 * g)"))
         .agg(count(lit(1)).as("n"), sum("x").as("sx"),
           sum(expr("x * x")).as("sxx"))
         .withColumn("overdispersed", expr("n * sxx - sx * sx > n * sx"))
@@ -177,7 +175,7 @@ object Round11Ops extends Family {
     // oracle side. Per-class counts + ppm.
     "llm_json_schema_validate" -> ((s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("conf", expr(s"${u("jsc")} % 100"))
+        .withColumn("conf", expr(s"${md5Bits("jsc", "doc_id", 8)} % 100"))
         .withColumn("resp", expr(
           """CASE
              WHEN doc_id % 19 = 0 THEN concat('{"answer":"a","confidence":', CAST(conf AS STRING), ',"sources":[1,2]')
@@ -211,7 +209,7 @@ object Round11Ops extends Family {
       val hyp = Tables.documents(s, d).where(col("doc_id") < 20)
         .select(col("doc_id").as("h"))
         .withColumn("p_ppm", expr(
-          s"IF(h < 5, ${u("hbp", "h")} % 500, ${u("hbq", "h")} % 1000000)"))
+          s"IF(h < 5, ${md5Bits("hbp", "h", 8)} % 500, ${md5Bits("hbq", "h", 8)} % 1000000)"))
       val w20 = Window.orderBy(col("p_ppm"), col("h")) // 20 rows
       hyp
         .withColumn("i", row_number().over(w20).cast("bigint"))
@@ -254,8 +252,8 @@ object Round11Ops extends Family {
     // verdict fully cross-multiplied T²·N·10⁴·... — no float anywhere.
     "agg_cochran_armitage" -> ((s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("dose", expr(s"${u("cad")} % 5"))
-        .withColumn("conv", expr(s"IF(${u("cac")} % 100 < 25 + 5 * dose, 1, 0)"))
+        .withColumn("dose", expr(s"${md5Bits("cad", "doc_id", 8)} % 5"))
+        .withColumn("conv", expr(s"IF(${md5Bits("cac", "doc_id", 8)} % 100 < 25 + 5 * dose, 1, 0)"))
       t.groupBy("dose")
         .agg(count(lit(1)).as("ni"), sum("conv").as("xi"))
         .agg(sum("ni").as("nn"), sum("xi").as("xx"),
@@ -288,7 +286,7 @@ object Round11Ops extends Family {
         .withColumn("n_t", count(lit(1)).over(Window.partitionBy("event_type")))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("x", expr(
-          s"500 + ${u("phn", "event_id")} % 41 - 20 + IF(rn * 10 > n_t * 6, 80, 0)"))
+          s"500 + ${md5Bits("phn", "event_id", 8)} % 41 - 20 + IF(rn * 10 > n_t * 6, 80, 0)"))
         .withColumn("m_t", sum(expr("x - 500 - 5")).over(
           ord.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("m_min", min("m_t").over(
@@ -397,7 +395,7 @@ object Round11Ops extends Family {
     // packed value stays in signed int64.
     "fn_bitpack_roundtrip" -> ((s, d) => {
       val fields = (0 to 7).map(i =>
-        expr(s"${u(s"bp$i", "event_id")} % ${if (i == 7) 128 else 256}").as(s"f$i"))
+        expr(s"${md5Bits(s"bp$i", "event_id", 8)} % ${if (i == 7) 128 else 256}").as(s"f$i"))
       val pack = (0 to 7).map(i => s"f$i * ${1L << (8 * i)}").mkString(" + ")
       val unpacks = (0 to 7).map(i =>
         expr(s"packed DIV ${1L << (8 * i)} % ${if (i == 7) 128 else 256}").as(s"u$i"))
@@ -422,11 +420,11 @@ object Round11Ops extends Family {
     // must read ≈ 0.
     "agg_factorial_effects" -> ((s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
-        .withColumn("a", expr(s"${u("fea")} % 2"))
-        .withColumn("b", expr(s"${u("feb")} % 2"))
-        .withColumn("c", expr(s"${u("fec")} % 2"))
+        .withColumn("a", expr(s"${md5Bits("fea", "doc_id", 8)} % 2"))
+        .withColumn("b", expr(s"${md5Bits("feb", "doc_id", 8)} % 2"))
+        .withColumn("c", expr(s"${md5Bits("fec", "doc_id", 8)} % 2"))
         .withColumn("y", expr(
-          s"100 + 20 * a + 10 * b + 15 * a * b + ${u("fen")} % 21 - 10"))
+          s"100 + 20 * a + 10 * b + 15 * a * b + ${md5Bits("fen", "doc_id", 8)} % 21 - 10"))
       val cells = t.groupBy("a", "b", "c")
         .agg(count(lit(1)).as("n"), sum("y").as("sy"))
         .withColumn("m_milli", expr(
@@ -466,7 +464,7 @@ object Round11Ops extends Family {
         .withColumn("cut", expr("n_t * 6 DIV 10"))
         .withColumn("post", expr("IF(rn > cut, 1, 0)"))
         .withColumn("y", expr(
-          s"""200 + 3 * rn + ${u("its", "event_id")} % 21 - 10
+          s"""200 + 3 * rn + ${md5Bits("its", "event_id", 8)} % 21 - 10
               + post * (500 + 2 * (rn - cut))"""))
         .withColumn("uu", expr("rn - cut"))
       def seg(name: String) = Seq(
@@ -546,9 +544,9 @@ object Round11Ops extends Family {
           .withColumn("d", expr("CAST(substring(CAST(x AS STRING), 1, 1) AS BIGINT)"))
           .groupBy("d").agg(count(lit(1)).as("c"))
           .withColumn("series", lit(label))
-      val uni = firstDigit(s"${u("bfu")} % 99000 + 1000", "uniform")
+      val uni = firstDigit(s"${md5Bits("bfu", "doc_id", 8)} % 99000 + 1000", "uniform")
       val pow = firstDigit(
-        s"shiftleft(CAST(1 AS BIGINT), CAST(${u("bfp")} % 30 AS INT))", "pow2")
+        s"shiftleft(CAST(1 AS BIGINT), CAST(${md5Bits("bfp", "doc_id", 8)} % 30 AS INT))", "pow2")
       uni.unionByName(pow)
         .withColumn("n", sum("c").over(Window.partitionBy("series")))
         .withColumn("gap", expr(s"abs(c * 1000000 DIV n - ($bCase))"))
@@ -568,11 +566,11 @@ object Round11Ops extends Family {
     "agg_oee" -> ((s, d) => {
       Tables.events(s, d).select(col("event_id"), col("event_type"))
         .withColumn("scheduled", lit(1L))
-        .withColumn("running", expr(s"IF(${u("oea", "event_id")} % 100 < 92, 1, 0)"))
+        .withColumn("running", expr(s"IF(${md5Bits("oea", "event_id", 8)} % 100 < 92, 1, 0)"))
         .withColumn("at_speed", expr(
-          s"IF(running = 1 AND ${u("oep", "event_id")} % 100 < 96, 1, 0)"))
+          s"IF(running = 1 AND ${md5Bits("oep", "event_id", 8)} % 100 < 96, 1, 0)"))
         .withColumn("good", expr(
-          s"IF(at_speed = 1 AND ${u("oeq", "event_id")} % 100 < 97, 1, 0)"))
+          s"IF(at_speed = 1 AND ${md5Bits("oeq", "event_id", 8)} % 100 < 97, 1, 0)"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum("running").as("run_units"),
@@ -599,7 +597,7 @@ object Round11Ops extends Family {
     "win_mtbf" -> ((s, d) => {
       val fails = Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"))
-        .where(expr(s"${u("mtf", "event_id")} % 50 = 0"))
+        .where(expr(s"${md5Bits("mtf", "event_id", 8)} % 50 = 0"))
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
       val gaps = fails
         .withColumn("prev_ts", lag("ts_us", 1).over(ord))
@@ -632,9 +630,9 @@ object Round11Ops extends Family {
       val recs = Tables.events(s, d)
         .select(col("event_type"), col("event_id"),
           floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("ok", expr(u("ro", "event_id")))
+        .withColumn("ok", expr(md5Bits("ro", "event_id", 8)))
         // 2^33 span keeps the composite collision-free and cents-major
-        .withColumn("x", expr(s"cents * 8589934592 + ${u("rv", "event_id")}"))
+        .withColumn("x", expr(s"cents * 8589934592 + ${md5Bits("rv", "event_id", 8)}"))
         .withColumn("rm", max("x").over(ord.rowsBetween(Window.unboundedPreceding, -1)))
         .withColumn("is_record", col("rm").isNull || col("x") > col("rm"))
         .groupBy("event_type")
@@ -667,7 +665,7 @@ object Round11Ops extends Family {
       val buckets = Tables.events(s, d)
         .select(col("event_type"),
           expr("CAST(FLOOR(value * 100) AS BIGINT) DIV 100").as("pb"),
-          expr(s"${u("vpv", "event_id")} % 100 + 1").as("vol"))
+          expr(s"${md5Bits("vpv", "event_id", 8)} % 100 + 1").as("vol"))
         .groupBy("event_type", "pb")
         .agg(sum("vol").as("v"))
       val wRank = Window.partitionBy("event_type").orderBy(col("v").desc, col("pb"))
@@ -699,8 +697,7 @@ object Round11Ops extends Family {
       val cand = qs.crossJoin(broadcast(s.range(0, 20).select(col("id").as("k"))))
         .withColumn("relevant", expr("IF(k < 3, 1, 0)"))
         .withColumn("score", expr(
-          s"""CAST(conv(substring(md5(concat('rak:', CAST(q AS STRING), ':',
-              CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000 + relevant * 300"""))
+          s"${md5Bits("concat('rak:', CAST(q AS STRING), ':', CAST(k AS STRING))", 8)} % 1000 + relevant * 300"))
         .withColumn("rk", row_number().over(
           Window.partitionBy("q").orderBy(col("score").desc, col("k"))).cast("bigint"))
       cand.agg(countDistinct("q").as("nq"),
@@ -727,8 +724,8 @@ object Round11Ops extends Family {
           .agg(count(lit(1)).as("n"), sum("x").as("sx"),
             sum(expr("x * x")).as("sxx"))
           .withColumn("series", lit(label))
-      series(s"${u("dia")} % 11", "uniform")
-        .unionByName(series(s"${u("dib")} % 6 + ${u("dic")} % 6", "two_dice"))
+      series(s"${md5Bits("dia", "doc_id", 8)} % 11", "uniform")
+        .unionByName(series(s"${md5Bits("dib", "doc_id", 8)} % 6 + ${md5Bits("dic", "doc_id", 8)} % 6", "two_dice"))
         .withColumn("d_milli", expr(
           "(n * sxx - sx * sx) * 1000 DIV ((n - 1) * sx)"))
         .withColumn("overdispersed", expr(
@@ -759,17 +756,17 @@ object Round11Ops extends Family {
 
     // Same three planted ratios, same ppm truncation chain.
     "agg_oee" ->
-      """WITH t AS (SELECT event_type, event_id,
-        |    CASE WHEN ('0x' || substring(md5('oea:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 92
+      s"""WITH t AS (SELECT event_type, event_id,
+        |    CASE WHEN ${duckMd5Bits("oea", "event_id", 8)} % 100 < 92
         |      THEN 1 ELSE 0 END AS running
         |  FROM events),
         |v AS (SELECT event_type, running,
-        |    CASE WHEN running = 1 AND ('0x' || substring(md5('oep:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 96
+        |    CASE WHEN running = 1 AND ${duckMd5Bits("oep", "event_id", 8)} % 100 < 96
         |      THEN 1 ELSE 0 END AS at_speed,
         |    event_id
         |  FROM t),
         |w AS (SELECT event_type, running, at_speed,
-        |    CASE WHEN at_speed = 1 AND ('0x' || substring(md5('oeq:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 97
+        |    CASE WHEN at_speed = 1 AND ${duckMd5Bits("oeq", "event_id", 8)} % 100 < 97
         |      THEN 1 ELSE 0 END AS good
         |  FROM v),
         |g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -787,9 +784,9 @@ object Round11Ops extends Family {
 
     // Same ~2% failure marks, same inter-failure gap arithmetic.
     "win_mtbf" ->
-      """WITH f AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us
+      s"""WITH f AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us
         |  FROM events
-        |  WHERE ('0x' || substring(md5('mtf:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 50 = 0),
+        |  WHERE ${duckMd5Bits("mtf", "event_id", 8)} % 50 = 0),
         |l AS (SELECT *, LAG(ts_us, 1) OVER (PARTITION BY event_type
         |    ORDER BY ts_us, event_id) AS prev_ts FROM f),
         |g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_gaps,
@@ -821,11 +818,11 @@ object Round11Ops extends Family {
 
     // Same literal Benford masses, same first-digit ppm gaps.
     "agg_benford_mad" ->
-      """WITH uni AS (SELECT 'uniform' AS series,
-        |    ('0x' || substring(md5('bfu:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 99000 + 1000 AS x
+      s"""WITH uni AS (SELECT 'uniform' AS series,
+        |    ${duckMd5Bits("bfu", "doc_id", 8)} % 99000 + 1000 AS x
         |  FROM documents),
         |p2 AS (SELECT 'pow2' AS series,
-        |    CAST(1 AS BIGINT) << CAST(('0x' || substring(md5('bfp:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 30 AS INT) AS x
+        |    CAST(1 AS BIGINT) << CAST(${duckMd5Bits("bfp", "doc_id", 8)} % 30 AS INT) AS x
         |  FROM documents),
         |a AS (SELECT series, CAST(substring(CAST(x AS VARCHAR), 1, 1) AS BIGINT) AS d
         |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM p2)),
@@ -845,11 +842,11 @@ object Round11Ops extends Family {
 
     // Same unweighted cell means, same ±contrasts ÷ 4.
     "agg_factorial_effects" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('fea:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS a,
-        |    ('0x' || substring(md5('feb:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS b,
-        |    ('0x' || substring(md5('fec:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS c,
-        |    ('0x' || substring(md5('fen:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 21 - 10 AS e
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("fea", "doc_id", 8)} % 2 AS a,
+        |    ${duckMd5Bits("feb", "doc_id", 8)} % 2 AS b,
+        |    ${duckMd5Bits("fec", "doc_id", 8)} % 2 AS c,
+        |    ${duckMd5Bits("fen", "doc_id", 8)} % 21 - 10 AS e
         |  FROM documents),
         |y AS (SELECT a, b, c, 100 + 20 * a + 10 * b + 15 * a * b + e AS y FROM t),
         |cells AS (SELECT a, b, c, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS sy
@@ -872,7 +869,7 @@ object Round11Ops extends Family {
 
     // Same cut-centered segment OLS, same sign-safe milli DIVs.
     "agg_its_segmented" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_t,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
         |      ORDER BY epoch_us(ts), event_id) AS BIGINT) AS rn
@@ -880,7 +877,7 @@ object Round11Ops extends Family {
         |x AS (SELECT *, n_t * 6 // 10 AS cut,
         |    CASE WHEN rn > n_t * 6 // 10 THEN 1 ELSE 0 END AS post FROM e),
         |y AS (SELECT *, rn - cut AS uu,
-        |    200 + 3 * rn + ('0x' || substring(md5('its:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 21 - 10
+        |    200 + 3 * rn + ${duckMd5Bits("its", "event_id", 8)} % 21 - 10
         |      + post * (500 + 2 * (rn - cut)) AS y
         |  FROM x),
         |g AS (SELECT event_type,
@@ -957,7 +954,7 @@ object Round11Ops extends Family {
     // Same shift pack, same DIV/MOD unpack, same graded identity.
     "fn_bitpack_roundtrip" ->
       ("""WITH f AS (SELECT event_id, """ + (0 to 7).map(i =>
-          s"('0x' || substring(md5('bp$i:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % ${if (i == 7) 128 else 256} AS f$i")
+          s"${duckMd5Bits(s"bp$i", "event_id", 8)} % ${if (i == 7) 128 else 256} AS f$i")
           .mkString(", ") + """
         |  FROM events WHERE event_id % 50 = 3),
         |p AS (SELECT *, """ + (0 to 7).map(i => s"f$i * ${1L << (8 * i)}").mkString(" + ") + """ AS packed FROM f)
@@ -968,11 +965,11 @@ object Round11Ops extends Family {
 
     // Same integer trend statistic, same cross-multiplied z².
     "agg_cochran_armitage" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('cad:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 5 AS dose
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("cad", "doc_id", 8)} % 5 AS dose
         |  FROM documents),
         |c AS (SELECT dose,
-        |    CASE WHEN ('0x' || substring(md5('cac:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100
+        |    CASE WHEN ${duckMd5Bits("cac", "doc_id", 8)} % 100
         |      < 25 + 5 * dose THEN 1 ELSE 0 END AS conv
         |  FROM t),
         |g AS (SELECT dose, CAST(COUNT(*) AS BIGINT) AS ni, CAST(SUM(conv) AS BIGINT) AS xi
@@ -990,12 +987,12 @@ object Round11Ops extends Family {
 
     // Same fixed-reference PH recursion-free form, same planted shift.
     "win_page_hinkley" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_t,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
         |      ORDER BY epoch_us(ts), event_id) AS BIGINT) AS rn
         |  FROM events),
-        |x AS (SELECT *, 500 + ('0x' || substring(md5('phn:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 41 - 20
+        |x AS (SELECT *, 500 + ${duckMd5Bits("phn", "event_id", 8)} % 41 - 20
         |    + CASE WHEN rn * 10 > n_t * 6 THEN 80 ELSE 0 END AS x
         |  FROM e),
         |m AS (SELECT *, CAST(SUM(x - 500 - 5) OVER w AS BIGINT) AS m_t
@@ -1037,8 +1034,8 @@ object Round11Ops extends Family {
 
     // Same planted breakage, same json_valid + TRY_CAST classes.
     "llm_json_schema_validate" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('jsc:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS conf
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("jsc", "doc_id", 8)} % 100 AS conf
         |  FROM documents),
         |r AS (SELECT doc_id,
         |    CASE
@@ -1051,11 +1048,11 @@ object Round11Ops extends Family {
         |c AS (SELECT
         |    CASE WHEN NOT json_valid(resp) THEN 1 ELSE 0 END AS malformed,
         |    CASE WHEN json_valid(resp)
-        |      AND TRY_CAST(json_extract_string(resp, '$.confidence') AS BIGINT) IS NULL
+        |      AND TRY_CAST(json_extract_string(resp, '$$.confidence') AS BIGINT) IS NULL
         |      THEN 1 ELSE 0 END AS conf_bad,
         |    CASE WHEN json_valid(resp)
-        |      AND TRY_CAST(json_extract_string(resp, '$.confidence') AS BIGINT) IS NOT NULL
-        |      AND json_array_length(json_extract(resp, '$.sources')) = 2
+        |      AND TRY_CAST(json_extract_string(resp, '$$.confidence') AS BIGINT) IS NOT NULL
+        |      AND json_array_length(json_extract(resp, '$$.sources')) = 2
         |      THEN 1 ELSE 0 END AS valid
         |  FROM r)
         |SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1067,11 +1064,11 @@ object Round11Ops extends Family {
 
     // Same step-down running AND over the 20-row rank order.
     "agg_holm_bonferroni" ->
-      """WITH h AS (SELECT doc_id AS h FROM documents WHERE doc_id < 20),
+      s"""WITH h AS (SELECT doc_id AS h FROM documents WHERE doc_id < 20),
         |p AS (SELECT h,
         |    CASE WHEN h < 5
-        |      THEN ('0x' || substring(md5('hbp:' || CAST(h AS VARCHAR)), 1, 8))::BIGINT % 500
-        |      ELSE ('0x' || substring(md5('hbq:' || CAST(h AS VARCHAR)), 1, 8))::BIGINT % 1000000
+        |      THEN ${duckMd5Bits("hbp", "h", 8)} % 500
+        |      ELSE ${duckMd5Bits("hbq", "h", 8)} % 1000000
         |    END AS p_ppm
         |  FROM h),
         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY p_ppm, h) AS BIGINT) AS i FROM p),
@@ -1119,12 +1116,12 @@ object Round11Ops extends Family {
 
     // Same grid, same per-term precision truncation, same final DIV.
     "agg_auc_pr" ->
-      """WITH t AS (SELECT doc_id,
-        |    CASE WHEN ('0x' || substring(md5('apt:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 = 0
+      s"""WITH t AS (SELECT doc_id,
+        |    CASE WHEN ${duckMd5Bits("apt", "doc_id", 8)} % 10 = 0
         |      THEN 1 ELSE 0 END AS truth
         |  FROM documents),
         |sc AS (SELECT truth,
-        |    ('0x' || substring(md5('aps:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 700000
+        |    ${duckMd5Bits("aps", "doc_id", 8)} % 700000
         |      + truth * 300000 AS score FROM t),
         |g AS (SELECT CAST(1000000 - v * 50000 AS BIGINT) AS thr FROM generate_series(1, 19) s(v)),
         |cm AS (SELECT thr,
@@ -1143,10 +1140,10 @@ object Round11Ops extends Family {
 
     // Same mixture plant, same cleared moment rationals.
     "agg_negbin_moments" ->
-      """WITH t AS (SELECT doc_id,
-        |    ('0x' || substring(md5('nbg:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 3 AS g
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("nbg", "doc_id", 8)} % 3 AS g
         |  FROM documents),
-        |v AS (SELECT ('0x' || substring(md5('nbx:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % (2 + 3 * g) AS x FROM t),
+        |v AS (SELECT ${duckMd5Bits("nbx", "doc_id", 8)} % (2 + 3 * g) AS x FROM t),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx,
         |    CAST(SUM(x * x) AS BIGINT) AS sxx FROM v)
         |SELECT n, sx, n * sxx - sx * sx > n * sx AS overdispersed,
@@ -1160,11 +1157,11 @@ object Round11Ops extends Family {
 
     // Same shuffle order, same tie-free composite, same harmonic sum.
     "win_record_highs" ->
-      """WITH e AS (SELECT event_type, event_id,
+      s"""WITH e AS (SELECT event_type, event_id,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
-        |    ('0x' || substring(md5('ro:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT AS ok,
+        |    ${duckMd5Bits("ro", "event_id", 8)} AS ok,
         |    CAST(FLOOR(value * 100) AS BIGINT) * 8589934592
-        |      + ('0x' || substring(md5('rv:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT AS x
+        |      + ${duckMd5Bits("rv", "event_id", 8)} AS x
         |  FROM events),
         |r AS (SELECT event_type, x,
         |    MAX(x) OVER (PARTITION BY event_type ORDER BY ok
@@ -1185,9 +1182,9 @@ object Round11Ops extends Family {
 
     // Same price buckets, same volume-ranked 70% value area.
     "win_volume_profile" ->
-      """WITH e AS (SELECT event_type,
+      s"""WITH e AS (SELECT event_type,
         |    CAST(FLOOR(value * 100) AS BIGINT) // 100 AS pb,
-        |    ('0x' || substring(md5('vpv:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 100 + 1 AS vol
+        |    ${duckMd5Bits("vpv", "event_id", 8)} % 100 + 1 AS vol
         |  FROM events),
         |b AS (SELECT event_type, pb, CAST(SUM(vol) AS BIGINT) AS v
         |  FROM e GROUP BY 1, 2),
@@ -1204,10 +1201,10 @@ object Round11Ops extends Family {
 
     // Same 20-candidate plant, same nested top-k recall ppms.
     "llm_recall_at_k" ->
-      """WITH q AS (SELECT doc_id AS q FROM documents WHERE doc_id % 7 = 0),
+      s"""WITH q AS (SELECT doc_id AS q FROM documents WHERE doc_id % 7 = 0),
         |k AS (SELECT CAST(v AS BIGINT) AS k FROM generate_series(0, 19) s(v)),
         |c AS (SELECT q, k, CASE WHEN k < 3 THEN 1 ELSE 0 END AS relevant,
-        |    ('0x' || substring(md5('rak:' || CAST(q AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    ${duckMd5Bits("'rak:' || CAST(q AS VARCHAR) || ':' || CAST(k AS VARCHAR)", 8)} % 1000
         |      + CASE WHEN k < 3 THEN 300 ELSE 0 END AS score
         |  FROM q CROSS JOIN k),
         |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY q
@@ -1225,13 +1222,13 @@ object Round11Ops extends Family {
 
     // Same mean-5 plants, same cross-multiplied 3/2 verdict.
     "agg_dispersion_index" ->
-      """WITH a AS (SELECT 'uniform' AS series,
-        |    ('0x' || substring(md5('dia:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 11 AS x
+      s"""WITH a AS (SELECT 'uniform' AS series,
+        |    ${duckMd5Bits("dia", "doc_id", 8)} % 11 AS x
         |  FROM documents
         |  UNION ALL
         |  SELECT 'two_dice',
-        |    ('0x' || substring(md5('dib:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 6
-        |    + ('0x' || substring(md5('dic:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 6
+        |    ${duckMd5Bits("dib", "doc_id", 8)} % 6
+        |    + ${duckMd5Bits("dic", "doc_id", 8)} % 6
         |  FROM documents),
         |g AS (SELECT series, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(x * x) AS BIGINT) AS sxx

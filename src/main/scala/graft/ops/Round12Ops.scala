@@ -250,7 +250,7 @@ object Round12Ops extends Family {
       val nTotal = sizes.getLong(0)
       val nCorpus = sizes.getLong(1)
       def centroidsOf(vs: DataFrame, mod: Long) = vs.where(
-        expr(s"CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % $mod = 0"))
+        expr(s"${md5Bits("CAST(vec_id AS STRING)", 8)} % $mod = 0"))
         .select(col("vec_id").as("cid"), col("xs").as("cs"))
       // FIXED-k probe sample (round-13 scale fix): the recall-truth sweep
       // below is |union| × |probes|; the old vec_id%25 rule grew the probe
@@ -677,14 +677,12 @@ object Round12Ops extends Family {
     // frequencies with the small-sample N(N−1) denominator, α in exact
     // ppm via ONE cross-multiplied DIV.
     "agg_krippendorff_alpha" -> ((s, d) => {
-      def u(ns: String, extra: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(doc_id AS STRING), ':', $extra)), 1, 8), 16, 10) AS BIGINT)"
       val codes = Tables.documents(s, d).where(col("doc_id") % 11 === 0)
         .select(col("doc_id"), explode(expr("sequence(0, 2)")).as("r"))
         .withColumn("code", expr(
-          s"""IF(${u("kn", "CAST(r AS STRING)")} % 10 < 8,
-             |   ${u("kb", "'b'")} % 4,
-             |   ${u("kc", "CAST(r AS STRING)")} % 4)""".stripMargin))
+          s"""IF(${md5Bits("concat('kn:', CAST(doc_id AS STRING), ':', CAST(r AS STRING))", 8)} % 10 < 8,
+             |   ${md5Bits("concat('kb:', CAST(doc_id AS STRING), ':', 'b')", 8)} % 4,
+             |   ${md5Bits("concat('kc:', CAST(doc_id AS STRING), ':', CAST(r AS STRING))", 8)} % 4)""".stripMargin))
         .localCheckpoint()
       val mism = codes.as("p").join(codes.as("q"),
           col("p.doc_id") === col("q.doc_id") && col("p.r") < col("q.r"))
@@ -707,11 +705,9 @@ object Round12Ops extends Family {
     // bounded 90-day axis walked with one cumulative window, each step
     // d·10⁶ DIV n_at_risk a DECLARED truncation summed exactly.
     "agg_nelson_aalen" -> ((s, d) => {
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val subj = Tables.events(s, d).select("user_id").distinct()
-        .withColumn("raw_day", expr(s"${u("na")} % 90 + 1"))
-        .withColumn("censored", expr(s"${u("nc")} % 7 = 0"))
+        .withColumn("raw_day", expr(s"${md5Bits("na", "user_id", 8)} % 90 + 1"))
+        .withColumn("censored", expr(s"${md5Bits("nc", "user_id", 8)} % 7 = 0"))
         .withColumn("day", expr("IF(censored, raw_day DIV 2 + 1, raw_day)"))
       val total = subj.agg(count(lit(1)).as("n_total"))
       val byDay = subj.groupBy("day")
@@ -848,7 +844,7 @@ object Round12Ops extends Family {
     // scale.
     "llm_domain_mix_mw" -> ((s, d) => {
       def loss(t: Int) =
-        s"(CAST(conv(substring(md5(concat('mw:', lang, ':', '$t')), 1, 8), 16, 10) AS BIGINT) % 400)"
+        s"(${md5Bits(s"concat('mw:', lang, ':', '$t')", 8)} % 400)"
       val domains = Tables.documents(s, d).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"))
       val stepped = domains.withColumn("w", expr(
@@ -985,9 +981,9 @@ object Round12Ops extends Family {
       Tables.events(s, d).where(col("event_id") % 17 === 0)
         .select(col("event_id"),
           expr("ts_us DIV 1000").as("ts_ms"),
-          expr("CAST(conv(substring(md5(concat('u1:', CAST(event_id AS STRING))), 1, 10), 16, 10) AS BIGINT) % 1099511627776")
+          expr(s"${md5Bits("u1", "event_id", 10)} % 1099511627776")
             .as("r1"),
-          expr("CAST(conv(substring(md5(concat('u2:', CAST(event_id AS STRING))), 1, 10), 16, 10) AS BIGINT) % 1099511627776")
+          expr(s"${md5Bits("u2", "event_id", 10)} % 1099511627776")
             .as("r2"))
         .withColumn("ulid", expr(s"concat($timeChars, $r1Chars, $r2Chars)"))
         .withColumn("ts_ms_decoded", expr(undig("ulid", 1, 10)))
@@ -1101,7 +1097,7 @@ object Round12Ops extends Family {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
       val flagged = toks.withColumn("hit", expr(
-        "IF(CAST(conv(substring(md5(concat('lex:', w)), 1, 8), 16, 10) AS BIGINT) % 97 = 13, 1, 0)"))
+        s"IF(${md5Bits("concat('lex:', w)", 8)} % 97 = 13, 1, 0)"))
       flagged.groupBy("doc_id", "lang")
         .agg(count(lit(1)).as("n_toks"), sum("hit").as("hits"))
         .withColumn("rate_mille", expr("(hits * 1000) DIV n_toks"))
@@ -1127,11 +1123,9 @@ object Round12Ops extends Family {
     // IEEE sqrt on an exact integer. Savings of advanced over basic in
     // ppm; over-budget flag per analyst.
     "agg_dp_budget" -> ((s, d) => {
-      def u(extra: String) =
-        s"CAST(conv(substring(md5(concat('dp:', CAST(analyst AS STRING), ':', $extra)), 1, 8), 16, 10) AS BIGINT)"
       val q = s.range(0, 5).select(col("id").as("analyst"))
         .select(col("analyst"), explode(expr("sequence(0, 19)")).as("qi"))
-        .withColumn("eps_micro", expr(s"${u("CAST(qi AS STRING)")} % 501 + 100"))
+        .withColumn("eps_micro", expr(s"${md5Bits("concat('dp:', CAST(analyst AS STRING), ':', CAST(qi AS STRING))", 8)} % 501 + 100"))
       q.groupBy("analyst")
         .agg(count(lit(1)).as("k"),
           sum("eps_micro").as("basic_micro"),
@@ -1411,12 +1405,10 @@ object Round12Ops extends Family {
 
     // Same planted 80%-agreement raters, same Do/De cross-multiplied α.
     "agg_krippendorff_alpha" ->
-      """WITH codes AS (SELECT doc_id, CAST(i AS BIGINT) AS r,
-        |    CASE WHEN ('0x' || substring(md5('kn:' || CAST(doc_id AS VARCHAR) || ':'
-        |        || CAST(i AS VARCHAR)), 1, 8))::BIGINT % 10 < 8
-        |      THEN ('0x' || substring(md5('kb:' || CAST(doc_id AS VARCHAR) || ':b'), 1, 8))::BIGINT % 4
-        |      ELSE ('0x' || substring(md5('kc:' || CAST(doc_id AS VARCHAR) || ':'
-        |        || CAST(i AS VARCHAR)), 1, 8))::BIGINT % 4 END AS code
+      s"""WITH codes AS (SELECT doc_id, CAST(i AS BIGINT) AS r,
+        |    CASE WHEN ${duckMd5Bits("'kn:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 8)} % 10 < 8
+        |      THEN ${duckMd5Bits("'kb:' || CAST(doc_id AS VARCHAR) || ':b'", 8)} % 4
+        |      ELSE ${duckMd5Bits("'kc:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 8)} % 4 END AS code
         |  FROM documents, generate_series(0, 2) t(i) WHERE doc_id % 11 = 0),
         |m AS (SELECT CAST(SUM(CASE WHEN p.code <> q.code THEN 1 ELSE 0 END) AS BIGINT) AS mismatch,
         |    CAST(COUNT(*) AS BIGINT) AS pairs
@@ -1430,9 +1422,9 @@ object Round12Ops extends Family {
 
     // Same synthetic lifetimes, same declared per-step micro truncation.
     "agg_nelson_aalen" ->
-      """WITH subj AS (SELECT user_id,
-        |    ('0x' || substring(md5('na:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 90 + 1 AS raw_day,
-        |    ('0x' || substring(md5('nc:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 7 = 0 AS censored
+      s"""WITH subj AS (SELECT user_id,
+        |    ${duckMd5Bits("na", "user_id", 8)} % 90 + 1 AS raw_day,
+        |    ${duckMd5Bits("nc", "user_id", 8)} % 7 = 0 AS censored
         |  FROM (SELECT DISTINCT user_id FROM events)),
         |s2 AS (SELECT user_id, censored,
         |    CASE WHEN censored THEN raw_day // 2 + 1 ELSE raw_day END AS day FROM subj),
@@ -1522,14 +1514,14 @@ object Round12Ops extends Family {
 
     // Same unrolled per-step truncation, same ppm share.
     "llm_domain_mix_mw" ->
-      """WITH d0 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang),
+      s"""WITH d0 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang),
         |st AS (SELECT lang, n_docs,
         |  ((((((((((1000000
-        |    * (1000 + ('0x' || substring(md5('mw:' || lang || ':' || '0'), 1, 8))::BIGINT % 400)) // 1000)
-        |    * (1000 + ('0x' || substring(md5('mw:' || lang || ':' || '1'), 1, 8))::BIGINT % 400)) // 1000)
-        |    * (1000 + ('0x' || substring(md5('mw:' || lang || ':' || '2'), 1, 8))::BIGINT % 400)) // 1000)
-        |    * (1000 + ('0x' || substring(md5('mw:' || lang || ':' || '3'), 1, 8))::BIGINT % 400)) // 1000)
-        |    * (1000 + ('0x' || substring(md5('mw:' || lang || ':' || '4'), 1, 8))::BIGINT % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '0'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '1'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '2'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '3'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '4'", 8)} % 400)) // 1000)
         |    AS w
         |  FROM d0),
         |tt AS (SELECT CAST(SUM(w) AS BIGINT) AS w_total FROM st)
@@ -1598,10 +1590,10 @@ object Round12Ops extends Family {
 
     // Same md5 pseudo-lexicon, same per-doc flag band, same rollup.
     "llm_toxicity_lexicon" ->
-      """WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
+      s"""WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
         |h AS (SELECT doc_id, lang,
-        |    CASE WHEN ('0x' || substring(md5('lex:' || w), 1, 8))::BIGINT % 97 = 13
+        |    CASE WHEN ${duckMd5Bits("'lex:' || w", 8)} % 97 = 13
         |      THEN 1 ELSE 0 END AS hit
         |  FROM toks),
         |pd AS (SELECT doc_id, lang, COUNT(*) AS n_toks, SUM(hit) AS hits,
@@ -1617,11 +1609,10 @@ object Round12Ops extends Family {
     // Same md5 ε draws, same frozen ln(1/δ) literal, same one-sqrt
     // advanced bound.
     "agg_dp_budget" ->
-      """WITH q AS (SELECT CAST(a.i AS BIGINT) AS analyst, CAST(qi.i AS BIGINT) AS qi
+      s"""WITH q AS (SELECT CAST(a.i AS BIGINT) AS analyst, CAST(qi.i AS BIGINT) AS qi
         |  FROM generate_series(0, 4) a(i), generate_series(0, 19) qi(i)),
         |e AS (SELECT analyst, qi,
-        |    ('0x' || substring(md5('dp:' || CAST(analyst AS VARCHAR) || ':'
-        |      || CAST(qi AS VARCHAR)), 1, 8))::BIGINT % 501 + 100 AS eps_micro
+        |    ${duckMd5Bits("'dp:' || CAST(analyst AS VARCHAR) || ':' || CAST(qi AS VARCHAR)", 8)} % 501 + 100 AS eps_micro
         |  FROM q),
         |g AS (SELECT analyst, CAST(COUNT(*) AS BIGINT) AS k,
         |    CAST(SUM(eps_micro) AS BIGINT) AS basic_micro,

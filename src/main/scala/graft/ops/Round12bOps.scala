@@ -169,8 +169,6 @@ object Round12bOps extends Family {
     // All milli-scaled integers; one shuffle, all windows on one sort.
     "win_keltner" -> ((s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       val terms = KeltnerW.zipWithIndex.map { case (wt, i) =>
         coalesce(lag(col("tp_milli"), i).over(ord) * wt, lit(0L)) }
       val denom = KeltnerW.zipWithIndex.map { case (wt, i) =>
@@ -178,8 +176,8 @@ object Round12bOps extends Family {
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("h", expr(s"cents + ${u("kch")} % 60"))
-        .withColumn("l", expr(s"cents - ${u("kcl")} % 60"))
+        .withColumn("h", expr(s"cents + ${md5Bits("kch", "event_id", 8)} % 60"))
+        .withColumn("l", expr(s"cents - ${md5Bits("kcl", "event_id", 8)} % 60"))
         .withColumn("tp_milli", expr("(h + l + cents) * 1000 DIV 3"))
         .withColumn("pc", coalesce(lag("cents", 1).over(ord), col("cents")))
         .withColumn("tr", expr("greatest(h - l, abs(h - pc), abs(l - pc))"))
@@ -269,7 +267,7 @@ object Round12bOps extends Family {
     // prerelease tags; the graded output is each version's global
     // precedence rank — any parse or ordering divergence shifts ranks.
     "fn_semver_compare" -> ((s, d) => {
-      val pre = "CASE CAST(conv(substring(md5(concat('sv:', CAST(pk AS STRING))), 1, 8), 16, 10) AS BIGINT) % 6 " +
+      val pre = s"CASE ${md5Bits("sv", "pk", 8)} % 6 " +
         "WHEN 0 THEN '' WHEN 1 THEN 'alpha' WHEN 2 THEN 'alpha.1' " +
         "WHEN 3 THEN 'beta.2' WHEN 4 THEN 'rc.1' ELSE 'rc.10' END"
       def fld(i: Int) = Seq(
@@ -559,7 +557,7 @@ object Round12bOps extends Family {
       val base = Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           expr("CAST(c_custkey AS BIGINT) % 8").as("stratum"),
-          expr("CASE WHEN CAST(conv(substring(md5(concat('smr:', CAST(c_custkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000 " +
+          expr(s"CASE WHEN ${md5Bits("smr", "c_custkey", 8)} % 1000 " +
             "< 40 + 15 * (CAST(c_custkey AS BIGINT) % 8) THEN 1 ELSE 0 END").as("ev"))
       val ref = base.groupBy("stratum")
         .agg(count(lit(1)).as("n_ref"), sum("ev").as("d_ref"))
@@ -785,9 +783,9 @@ object Round12bOps extends Family {
     "agg_aalen_johansen" -> ((s, d) => {
       val lab = Tables.events(s, d).select("user_id").distinct()
         .withColumn("dur_raw", expr(
-          "CAST(conv(substring(md5(concat('aj:', CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("aj", "user_id", 8)} % 100"))
         .withColumn("cause_raw", expr(
-          "1 + CAST(conv(substring(md5(concat('ajc:', CAST(user_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2"))
+          s"1 + ${md5Bits("ajc", "user_id", 8)} % 2"))
         .select((col("user_id") % 3).as("cohort"),
           least(col("dur_raw"), lit(60L)).as("dur"),
           when(col("dur_raw") <= 60, col("cause_raw")).otherwise(0L).as("cause"))
@@ -833,7 +831,7 @@ object Round12bOps extends Family {
       val q = Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           expr("CAST(c_custkey AS BIGINT) % 8").as("band"),
-          expr("CASE WHEN CAST(conv(substring(md5(concat('lt:', CAST(c_custkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000 " +
+          expr(s"CASE WHEN ${md5Bits("lt", "c_custkey", 8)} % 1000 " +
             "< 60 + 25 * (CAST(c_custkey AS BIGINT) % 8) THEN 1 ELSE 0 END").as("dx"))
         .groupBy("seg", "band")
         .agg(count(lit(1)).as("nx"), sum("dx").as("dx"))
@@ -889,13 +887,11 @@ object Round12bOps extends Family {
     "win_dmi_adx" -> ((s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
       val w14 = ord.rowsBetween(-13, 0)
-      def u(ns: String) =
-        s"CAST(conv(substring(md5(concat('$ns:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("h", expr(s"cents + ${u("dmh")} % 60"))
-        .withColumn("l", expr(s"cents - ${u("dml")} % 60"))
+        .withColumn("h", expr(s"cents + ${md5Bits("dmh", "event_id", 8)} % 60"))
+        .withColumn("l", expr(s"cents - ${md5Bits("dml", "event_id", 8)} % 60"))
         .withColumn("ph", lag("h", 1).over(ord))
         .withColumn("pl", lag("l", 1).over(ord))
         .withColumn("pc", coalesce(lag("cents", 1).over(ord), col("cents")))
@@ -969,7 +965,7 @@ object Round12bOps extends Family {
     // One scan, broadcast-free, codegen regexps.
     "fn_user_agent_parse" -> ((s, d) => {
       val ua =
-        """CASE CAST(conv(substring(md5(concat('ua:', CAST(c_custkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 5
+        s"""CASE ${md5Bits("ua", "c_custkey", 8)} % 5
           |  WHEN 0 THEN concat('Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/', 100 + c_custkey % 30, '.0.0.0 Safari/537.36')
           |  WHEN 1 THEN concat('Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) AppleWebKit/605.1.15 (KHTML, like Gecko) Version/', 14 + c_custkey % 4, '.1 Safari/605.1.15')
           |  WHEN 2 THEN concat('Mozilla/5.0 (X11; Linux x86_64; rv:', 90 + c_custkey % 20, '.0) Gecko/20100101 Firefox/', 90 + c_custkey % 20, '.0')
@@ -1197,8 +1193,8 @@ object Round12bOps extends Family {
       s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
          |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
          |hl AS (SELECT *,
-         |    cents + ('0x' || substring(md5('kch:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 60 AS h,
-         |    cents - ('0x' || substring(md5('kcl:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 60 AS l
+         |    cents + ${duckMd5Bits("kch", "event_id", 8)} % 60 AS h,
+         |    cents - ${duckMd5Bits("kcl", "event_id", 8)} % 60 AS l
          |  FROM e),
          |tp AS (SELECT *, (h + l + cents) * 1000 // 3 AS tp_milli,
          |    COALESCE(LAG(cents, 1) OVER o, cents) AS pc,
@@ -1277,10 +1273,10 @@ object Round12bOps extends Family {
     // Same md5 tag pick, same field-wise precedence key, same global
     // row_number.
     "fn_semver_compare" ->
-      """WITH p AS (SELECT CAST(p_partkey AS BIGINT) AS pk FROM part
+      s"""WITH p AS (SELECT CAST(p_partkey AS BIGINT) AS pk FROM part
         |  WHERE p_partkey % 7 = 2),
         |v AS (SELECT pk, pk % 4 AS maj, pk // 4 % 5 AS mnr, pk // 20 % 10 AS pat,
-        |    CASE ('0x' || substring(md5('sv:' || CAST(pk AS VARCHAR)), 1, 8))::BIGINT % 6
+        |    CASE ${duckMd5Bits("sv", "pk", 8)} % 6
         |      WHEN 0 THEN '' WHEN 1 THEN 'alpha' WHEN 2 THEN 'alpha.1'
         |      WHEN 3 THEN 'beta.2' WHEN 4 THEN 'rc.1' ELSE 'rc.10' END AS pre
         |  FROM p),
@@ -1291,12 +1287,12 @@ object Round12bOps extends Family {
         |    split_part(pre, '.', 1) AS p1, split_part(pre, '.', 2) AS p2
         |  FROM v),
         |k AS (SELECT *,
-        |    CASE WHEN p1 = '' THEN -1 WHEN regexp_matches(p1, '^[0-9]+$') THEN 0 ELSE 1 END AS f1_type,
-        |    CASE WHEN regexp_matches(p1, '^[0-9]+$') THEN CAST(p1 AS BIGINT) ELSE -1 END AS f1_num,
-        |    CASE WHEN p1 <> '' AND NOT regexp_matches(p1, '^[0-9]+$') THEN p1 ELSE '' END AS f1_str,
-        |    CASE WHEN p2 = '' THEN -1 WHEN regexp_matches(p2, '^[0-9]+$') THEN 0 ELSE 1 END AS f2_type,
-        |    CASE WHEN regexp_matches(p2, '^[0-9]+$') THEN CAST(p2 AS BIGINT) ELSE -1 END AS f2_num,
-        |    CASE WHEN p2 <> '' AND NOT regexp_matches(p2, '^[0-9]+$') THEN p2 ELSE '' END AS f2_str
+        |    CASE WHEN p1 = '' THEN -1 WHEN regexp_matches(p1, '^[0-9]+$$') THEN 0 ELSE 1 END AS f1_type,
+        |    CASE WHEN regexp_matches(p1, '^[0-9]+$$') THEN CAST(p1 AS BIGINT) ELSE -1 END AS f1_num,
+        |    CASE WHEN p1 <> '' AND NOT regexp_matches(p1, '^[0-9]+$$') THEN p1 ELSE '' END AS f1_str,
+        |    CASE WHEN p2 = '' THEN -1 WHEN regexp_matches(p2, '^[0-9]+$$') THEN 0 ELSE 1 END AS f2_type,
+        |    CASE WHEN regexp_matches(p2, '^[0-9]+$$') THEN CAST(p2 AS BIGINT) ELSE -1 END AS f2_num,
+        |    CASE WHEN p2 <> '' AND NOT regexp_matches(p2, '^[0-9]+$$') THEN p2 ELSE '' END AS f2_str
         |  FROM f)
         |SELECT pk, version,
         |  CAST(ROW_NUMBER() OVER (ORDER BY maj, mnr, pat, rel_flag,
@@ -1494,9 +1490,9 @@ object Round12bOps extends Family {
 
     // Same planted stratified rates, same declared division order.
     "agg_smr_standardization" ->
-      """WITH base AS (SELECT c_mktsegment AS seg,
+      s"""WITH base AS (SELECT c_mktsegment AS seg,
         |    CAST(c_custkey AS BIGINT) % 8 AS stratum,
-        |    CASE WHEN ('0x' || substring(md5('smr:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    CASE WHEN ${duckMd5Bits("smr", "c_custkey", 8)} % 1000
         |      < 40 + 15 * (CAST(c_custkey AS BIGINT) % 8) THEN 1 ELSE 0 END AS ev
         |  FROM customer),
         |ref AS (SELECT stratum, CAST(COUNT(*) AS BIGINT) AS n_ref,
@@ -1679,10 +1675,10 @@ object Round12bOps extends Family {
     // Same planted durations/causes, same recursive struct-state fold
     // (the KM WITH RECURSIVE law with a 3-component accumulator).
     "agg_aalen_johansen" ->
-      """WITH RECURSIVE u AS (SELECT DISTINCT user_id FROM events),
+      s"""WITH RECURSIVE u AS (SELECT DISTINCT user_id FROM events),
         |pl AS (SELECT user_id,
-        |    ('0x' || substring(md5('aj:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS dur_raw,
-        |    1 + ('0x' || substring(md5('ajc:' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS cause_raw
+        |    ${duckMd5Bits("aj", "user_id", 8)} % 100 AS dur_raw,
+        |    1 + ${duckMd5Bits("ajc", "user_id", 8)} % 2 AS cause_raw
         |  FROM u),
         |lab AS (SELECT user_id % 3 AS cohort, LEAST(dur_raw, 60) AS dur,
         |    CASE WHEN dur_raw <= 60 THEN cause_raw ELSE 0 END AS cause
@@ -1732,10 +1728,10 @@ object Round12bOps extends Family {
     // (caught at sf0.001 in round 17, where one segment has an empty
     // band; identical output on gap-free data).
     "agg_life_table" ->
-      """WITH RECURSIVE q AS (SELECT c_mktsegment AS seg,
+      s"""WITH RECURSIVE q AS (SELECT c_mktsegment AS seg,
         |    CAST(c_custkey AS BIGINT) % 8 AS band,
         |    CAST(COUNT(*) AS BIGINT) AS nx,
-        |    CAST(SUM(CASE WHEN ('0x' || substring(md5('lt:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 1000
+        |    CAST(SUM(CASE WHEN ${duckMd5Bits("lt", "c_custkey", 8)} % 1000
         |      < 60 + 25 * (CAST(c_custkey AS BIGINT) % 8) THEN 1 ELSE 0 END) AS BIGINT) AS dx
         |  FROM customer GROUP BY 1, 2),
         |qq AS (SELECT *, dx * 1000000 // nx AS qx_ppm,
@@ -1774,11 +1770,11 @@ object Round12bOps extends Family {
 
     // Same md5 h/l namespaces, same gated DM, same 14-bar sums.
     "win_dmi_adx" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
         |hl AS (SELECT *,
-        |    cents + ('0x' || substring(md5('dmh:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 60 AS h,
-        |    cents - ('0x' || substring(md5('dml:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 60 AS l
+        |    cents + ${duckMd5Bits("dmh", "event_id", 8)} % 60 AS h,
+        |    cents - ${duckMd5Bits("dml", "event_id", 8)} % 60 AS l
         |  FROM e),
         |p AS (SELECT *, LAG(h) OVER o AS ph, LAG(l) OVER o AS pl,
         |    COALESCE(LAG(cents) OVER o, cents) AS pc,
@@ -1847,8 +1843,8 @@ object Round12bOps extends Family {
     // Same literal templates, same classification regexps, same major
     // extraction (TRY_CAST(NULLIF …) mirrors Spark's lax '' → NULL).
     "fn_user_agent_parse" ->
-      """WITH ua AS (SELECT c_custkey,
-        |    CASE ('0x' || substring(md5('ua:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 5
+      s"""WITH ua AS (SELECT c_custkey,
+        |    CASE ${duckMd5Bits("ua", "c_custkey", 8)} % 5
         |      WHEN 0 THEN 'Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 (KHTML, like Gecko) Chrome/' || CAST(100 + c_custkey % 30 AS VARCHAR) || '.0.0.0 Safari/537.36'
         |      WHEN 1 THEN 'Mozilla/5.0 (Macintosh; Intel Mac OS X 10_15_7) AppleWebKit/605.1.15 (KHTML, like Gecko) Version/' || CAST(14 + c_custkey % 4 AS VARCHAR) || '.1 Safari/605.1.15'
         |      WHEN 2 THEN 'Mozilla/5.0 (X11; Linux x86_64; rv:' || CAST(90 + c_custkey % 20 AS VARCHAR) || '.0) Gecko/20100101 Firefox/' || CAST(90 + c_custkey % 20 AS VARCHAR) || '.0'

@@ -167,7 +167,7 @@ object Round13Ops extends Family {
         .select(col("file_id"), col("n_frames"),
           explode(expr("sequence(CAST(0 AS BIGINT), n_frames - 1)")).as("fr"))
         .withColumn("energy", expr(
-          "CAST(conv(substring(md5(concat('vad:', CAST(file_id AS STRING), ':', CAST(fr AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("concat('vad:', CAST(file_id AS STRING), ':', CAST(fr AS STRING))", 6)} % 1000"))
       val voiced = frames.where(col("energy") >= 550)
       val wF = Window.partitionBy("file_id").orderBy("fr")
       val chunks = voiced
@@ -278,7 +278,7 @@ object Round13Ops extends Family {
       val base = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("task"))
         .withColumn("ok", (expr(
-          "CAST(conv(substring(md5(concat('bsok:', CAST(task AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000") < 600).cast("long"))
+          s"${md5Bits("bsok", "task", 6)} % 1000") < 600).cast("long"))
       // Dense 0..n-1 task index WITHOUT a global single-partition sort:
       // range-bucket on the key (task DIV c is monotonic, so buckets are
       // ordered key ranges), per-bucket counts rolled into cumulative
@@ -316,7 +316,7 @@ object Round13Ops extends Family {
       val draws = tasks.select(col("task").as("src_task")).repartition(par)
         .crossJoin(broadcast(s.range(0, 50).select(col("id").as("b"))))
         .select(col("b"), expr(
-          s"CAST(conv(substring(md5(concat('bs:', CAST(b AS STRING), ':', CAST(src_task AS STRING))), 1, 8), 16, 10) AS BIGINT) % $n")
+          s"${md5Bits("concat('bs:', CAST(b AS STRING), ':', CAST(src_task AS STRING))", 8)} % $n")
           .as("idx"))
       val means = draws.join(broadcast(tasks.select("idx", "ok")), Seq("idx"))
         .groupBy("b")
@@ -559,7 +559,7 @@ object Round13Ops extends Family {
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_tokens"))
         .withColumn("a_ppm", expr(
-          "CAST(conv(substring(md5(concat('spec:', event_type)), 1, 6), 16, 10) AS BIGINT) % 400000 + 550000"))
+          s"${md5Bits("concat('spec:', event_type)", 6)} % 400000 + 550000"))
         .withColumn("e_accept_ppm", expr(
           """a_ppm
             |+ CAST(CAST(a_ppm AS DECIMAL(38,0)) * a_ppm DIV 1000000 AS BIGINT)
@@ -886,13 +886,13 @@ object Round13Ops extends Family {
           .withColumn("system", lit(sys))
           .withColumn("priority", lit(prio.toLong))
           .withColumn("email_h", expr(
-            s"CAST(conv(substring(md5(concat('$sys:em:', CAST(entity AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000"))
+            s"${md5Bits(s"$sys:em", "entity", 6)} % 100000"))
           .withColumn("phone_h", expr(
             // crm and web AGREE on phone (shared upstream); legacy drifts
             if (sys == "legacy")
-              "CAST(conv(substring(md5(concat('lg:ph:', CAST(entity AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000"
+              s"${md5Bits("lg:ph", "entity", 6)} % 100000"
             else
-              "CAST(conv(substring(md5(concat('ph:', CAST(entity AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000"))
+              s"${md5Bits("ph", "entity", 6)} % 100000"))
       val all = obs("crm", 1, "entity % 3 = 0")
         .unionByName(obs("web", 2, "entity % 4 = 1"))
         .unionByName(obs("legacy", 3, "1 = 0"))
@@ -1061,7 +1061,7 @@ object Round13Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"),
           col("c_nationkey").cast("bigint").as("grp"))
         .withColumn("pos", (expr(
-          "CAST(conv(substring(md5(concat('fair:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000")
+          s"${md5Bits("fair", "k", 6)} % 1000")
           < (lit(450L) + col("grp") * 10L)).cast("long"))
       val g = t.groupBy("grp")
         .agg(count(lit(1)).as("n"), sum("pos").as("n_pos"))
@@ -1200,11 +1200,11 @@ object Round13Ops extends Family {
         .select(col("s_suppkey").cast("bigint").as("meter"))
         .select(col("meter"), explode(expr("sequence(CAST(0 AS BIGINT), 47)")).as("h"))
         .withColumn("present", expr(
-          "CAST(conv(substring(md5(concat('mr:', CAST(meter AS STRING), ':', CAST(h AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3 <> 0"))
+          s"${md5Bits("concat('mr:', CAST(meter AS STRING), ':', CAST(h AS STRING))", 6)} % 3 <> 0"))
         .withColumn("reading",
           when(col("present"),
             col("meter") * 100000L + col("h") * 1000L +
-              expr("CAST(conv(substring(md5(concat('rv:', CAST(meter AS STRING), ':', CAST(h AS STRING))), 1, 6), 16, 10) AS BIGINT) % 500"))
+              expr(s"${md5Bits("concat('rv:', CAST(meter AS STRING), ':', CAST(h AS STRING))", 6)} % 500"))
             .otherwise(lit(null)))
       val w = Window.partitionBy("meter").orderBy("h")
       val filled = grid
@@ -1399,7 +1399,7 @@ object Round13Ops extends Family {
           Tuple1("helpfulness"), Tuple1("correctness"), Tuple1("style")))
           .toDF("dim")))
         .withColumn("score", expr(
-          "CAST(conv(substring(md5(concat('rub:', CAST(doc_id AS STRING), ':', CAST(judge AS STRING), ':', dim)), 1, 6), 16, 10) AS BIGINT) % 5"))
+          s"${md5Bits("concat('rub:', CAST(doc_id AS STRING), ':', CAST(judge AS STRING), ':', dim)", 6)} % 5"))
       val perItem = scores.groupBy("doc_id", "dim")
         .agg(sum("score").as("s"), min("score").as("lo"), max("score").as("hi"))
         .withColumn("trimmed_milli", expr("((s - lo - hi) * 1000) DIV 3"))
@@ -1590,14 +1590,14 @@ object Round13Ops extends Family {
         |FROM live GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "mm_audio_vad_chunks" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT CAST(p_partkey AS BIGINT) AS file_id,
         |    CAST(p_partkey AS BIGINT) % 60 + 40 AS n_frames
         |  FROM part),
         |pos AS (SELECT CAST(t.i AS BIGINT) AS i FROM generate_series(0, 99) AS t(i)),
         |fr AS (
         |  SELECT file_id, n_frames, pos.i AS fr,
-        |    ('0x' || substring(md5('vad:' || CAST(file_id AS VARCHAR) || ':' || CAST(pos.i AS VARCHAR)), 1, 6))::BIGINT % 1000 AS energy
+        |    ${duckMd5Bits("'vad:' || CAST(file_id AS VARCHAR) || ':' || CAST(pos.i AS VARCHAR)", 6)} % 1000 AS energy
         |  FROM f JOIN pos ON pos.i < f.n_frames),
         |v AS (SELECT * FROM fr WHERE energy >= 550),
         |g AS (
@@ -1684,16 +1684,16 @@ object Round13Ops extends Family {
         |FROM c GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin,
 
     "llm_eval_bootstrap_ci" ->
-      """WITH tasks AS (
+      s"""WITH tasks AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS task,
-        |    CASE WHEN ('0x' || substring(md5('bsok:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 1000 < 600
+        |    CASE WHEN ${duckMd5Bits("bsok", "o_orderkey", 6)} % 1000 < 600
         |      THEN 1 ELSE 0 END AS ok,
         |    ROW_NUMBER() OVER (ORDER BY CAST(o_orderkey AS BIGINT)) - 1 AS idx
         |  FROM orders),
         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM tasks),
         |draws AS (
         |  SELECT CAST(b.i AS BIGINT) AS b,
-        |    ('0x' || substring(md5('bs:' || CAST(b.i AS VARCHAR) || ':' || CAST(t.task AS VARCHAR)), 1, 8))::BIGINT % (SELECT n FROM n) AS idx
+        |    ${duckMd5Bits("'bs:' || CAST(b.i AS VARCHAR) || ':' || CAST(t.task AS VARCHAR)", 8)} % (SELECT n FROM n) AS idx
         |  FROM tasks t, generate_series(0, 49) AS b(i)),
         |means AS (
         |  SELECT d.b, (SUM(t.ok) * 1000000) // (SELECT n FROM n) AS mean_ppm
@@ -1762,9 +1762,9 @@ object Round13Ops extends Family {
         |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "llm_speculative_plan" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |    ('0x' || substring(md5('spec:' || event_type), 1, 6))::BIGINT % 400000 + 550000 AS a_ppm
+        |    ${duckMd5Bits("'spec:' || event_type", 6)} % 400000 + 550000 AS a_ppm
         |  FROM events GROUP BY 1),
         |e AS (
         |  SELECT event_type, n_tokens, a_ppm,
@@ -1988,21 +1988,21 @@ object Round13Ops extends Family {
         |FROM st GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "join_survivorship_merge" ->
-      """WITH ent AS (SELECT CAST(c_custkey AS BIGINT) AS entity FROM customer),
+      s"""WITH ent AS (SELECT CAST(c_custkey AS BIGINT) AS entity FROM customer),
         |o AS (
         |  SELECT entity, 'crm' AS system, CAST(1 AS BIGINT) AS priority,
-        |    ('0x' || substring(md5('crm:em:' || CAST(entity AS VARCHAR)), 1, 6))::BIGINT % 100000 AS email_h,
-        |    ('0x' || substring(md5('ph:' || CAST(entity AS VARCHAR)), 1, 6))::BIGINT % 100000 AS phone_h
+        |    ${duckMd5Bits("crm:em", "entity", 6)} % 100000 AS email_h,
+        |    ${duckMd5Bits("ph", "entity", 6)} % 100000 AS phone_h
         |  FROM ent WHERE NOT (entity % 3 = 0)
         |  UNION ALL
         |  SELECT entity, 'web', 2,
-        |    ('0x' || substring(md5('web:em:' || CAST(entity AS VARCHAR)), 1, 6))::BIGINT % 100000,
-        |    ('0x' || substring(md5('ph:' || CAST(entity AS VARCHAR)), 1, 6))::BIGINT % 100000
+        |    ${duckMd5Bits("web:em", "entity", 6)} % 100000,
+        |    ${duckMd5Bits("ph", "entity", 6)} % 100000
         |  FROM ent WHERE NOT (entity % 4 = 1)
         |  UNION ALL
         |  SELECT entity, 'legacy', 3,
-        |    ('0x' || substring(md5('legacy:em:' || CAST(entity AS VARCHAR)), 1, 6))::BIGINT % 100000,
-        |    ('0x' || substring(md5('lg:ph:' || CAST(entity AS VARCHAR)), 1, 6))::BIGINT % 100000
+        |    ${duckMd5Bits("legacy:em", "entity", 6)} % 100000,
+        |    ${duckMd5Bits("lg:ph", "entity", 6)} % 100000
         |  FROM ent),
         |g AS (
         |  SELECT entity,
@@ -2124,10 +2124,10 @@ object Round13Ops extends Family {
         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "agg_fairness_parity" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k,
         |    CAST(c_nationkey AS BIGINT) AS grp,
-        |    CASE WHEN ('0x' || substring(md5('fair:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 1000
+        |    CASE WHEN ${duckMd5Bits("fair", "c_custkey", 6)} % 1000
         |      < 450 + CAST(c_nationkey AS BIGINT) * 10 THEN 1 ELSE 0 END AS pos
         |  FROM customer),
         |g AS (
@@ -2229,16 +2229,16 @@ object Round13Ops extends Family {
         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "win_meter_interpolate" ->
-      """WITH pos AS (SELECT CAST(t.i AS BIGINT) AS h FROM generate_series(0, 47) AS t(i)),
+      s"""WITH pos AS (SELECT CAST(t.i AS BIGINT) AS h FROM generate_series(0, 47) AS t(i)),
         |grid AS (
         |  SELECT CAST(s_suppkey AS BIGINT) AS meter, pos.h,
-        |    ('0x' || substring(md5('mr:' || CAST(s_suppkey AS VARCHAR) || ':' || CAST(pos.h AS VARCHAR)), 1, 6))::BIGINT % 3 <> 0 AS present
+        |    ${duckMd5Bits("'mr:' || CAST(s_suppkey AS VARCHAR) || ':' || CAST(pos.h AS VARCHAR)", 6)} % 3 <> 0 AS present
         |  FROM supplier, pos),
         |rd AS (
         |  SELECT meter, h,
         |    CASE WHEN present THEN
         |      meter * 100000 + h * 1000 +
-        |      ('0x' || substring(md5('rv:' || CAST(meter AS VARCHAR) || ':' || CAST(h AS VARCHAR)), 1, 6))::BIGINT % 500
+        |      ${duckMd5Bits("'rv:' || CAST(meter AS VARCHAR) || ':' || CAST(h AS VARCHAR)", 6)} % 500
         |    END AS reading
         |  FROM grid),
         |f AS (
@@ -2390,12 +2390,12 @@ object Round13Ops extends Family {
         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "llm_rubric_judge_panel" ->
-      """WITH items AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 3),
+      s"""WITH items AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 3),
         |dims AS (SELECT unnest(['helpfulness', 'correctness', 'style']) AS dim),
         |judges AS (SELECT CAST(t.i AS BIGINT) AS judge FROM generate_series(0, 4) AS t(i)),
         |sc AS (
         |  SELECT i.doc_id, d.dim, j.judge,
-        |    ('0x' || substring(md5('rub:' || CAST(i.doc_id AS VARCHAR) || ':' || CAST(j.judge AS VARCHAR) || ':' || d.dim), 1, 6))::BIGINT % 5 AS score
+        |    ${duckMd5Bits("'rub:' || CAST(i.doc_id AS VARCHAR) || ':' || CAST(j.judge AS VARCHAR) || ':' || d.dim", 6)} % 5 AS score
         |  FROM items i, judges j, dims d),
         |pi AS (
         |  SELECT doc_id, dim,

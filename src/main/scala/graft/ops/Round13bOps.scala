@@ -242,9 +242,7 @@ object Round13bOps extends Family {
       Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
         .crossJoin(broadcast(q))
         .withColumn("score", expr(
-          """CAST(conv(substring(md5(concat(CAST(q AS STRING), ':',
-            |  CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"""
-            .stripMargin))
+          s"${md5Bits("concat(CAST(q AS STRING), ':', CAST(doc_id AS STRING))", 6)} % 1000"))
         .where(col("score") >= 900)
         .withColumn("tok", expr("n_chars DIV 4"))
         .withColumn("cumtok", sum("tok").over(wPack))
@@ -303,9 +301,8 @@ object Round13bOps extends Family {
     "llm_wer_eval" -> ((s, d) => {
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
-          expr("""array_join(transform(slice(split(text, ' '), 1, 12),
-                 |  w -> chr(65 + CAST(conv(substring(md5(w), 1, 4), 16, 10)
-                 |           AS BIGINT) % 26)), '')""".stripMargin).as("enc"),
+          expr(s"""array_join(transform(slice(split(text, ' '), 1, 12),
+                 |  w -> chr(65 + ${md5Bits("w", 4)} % 26)), '')""".stripMargin).as("enc"),
           expr("least(size(split(text, ' ')), 12)").as("n_words"))
         .withColumn("class",
           when(col("doc_id") % 3 === 0, lit("drop3"))
@@ -447,7 +444,7 @@ object Round13bOps extends Family {
         .withColumn("host", concat(col("source"), lit("-"),
           (col("doc_id") % 50).cast("string")))
         .withColumn("prio", expr(
-          "CAST(conv(substring(md5(concat('url:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("url", "doc_id", 6)} % 1000"))
         .withColumn("rn", row_number().over(wh))
         .withColumn("round", expr("(CAST(rn AS BIGINT) - 1) DIV 2"))
         .groupBy("source")
@@ -473,9 +470,9 @@ object Round13bOps extends Family {
       val routed = Tables.events(s, d)
         .select(col("event_id"), (col("event_id") % 4).as("layer"))
         .withColumn("e1", expr(
-          "CAST(conv(substring(md5(concat('e1:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 16"))
+          s"${md5Bits("e1", "event_id", 6)} % 16"))
         .withColumn("e2r", expr(
-          "CAST(conv(substring(md5(concat('e2:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 15"))
+          s"${md5Bits("e2", "event_id", 6)} % 15"))
         .withColumn("e2", when(col("e2r") >= col("e1"), col("e2r") + 1)
           .otherwise(col("e2r")))
       val loads = routed.select(col("layer"), col("e1").as("expert"))
@@ -518,9 +515,8 @@ object Round13bOps extends Family {
         .select(col("user_id"), col("event_id"), col("ts_us"))
         .withColumn("shot", expr("(CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) - 1) DIV 5"))
         .withColumn("phash", expr(
-          """CAST(conv(substring(md5(concat('ph:', CAST(user_id AS STRING), ':',
-            |  CAST(shot AS STRING))), 1, 15), 16, 10) AS BIGINT)"""
-            .stripMargin).bitwiseXOR(col("event_id") % 3))
+          md5Bits("concat('ph:', CAST(user_id AS STRING), ':', CAST(shot AS STRING))", 15))
+          .bitwiseXOR(col("event_id") % 3))
         .withColumn("prev", lag("phash", 1).over(wu))
         .withColumn("dropped", when(col("prev").isNotNull &&
           bit_count(col("phash").bitwiseXOR(col("prev"))) <= 4, 1L).otherwise(0L))
@@ -608,11 +604,9 @@ object Round13bOps extends Family {
     "service_api_version_adoption" -> ((s, d) => {
       val calls = Tables.events(s, d)
         .select(expr("ts_us DIV 604800000000").as("week"),
-          expr("""CASE WHEN CAST(conv(substring(md5(concat('ver:',
-                 |  CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000 < 5
+          expr(s"""CASE WHEN ${md5Bits("ver", "event_id", 6)} % 1000 < 5
                  |THEN 'v0'
-                 |WHEN CAST(conv(substring(md5(concat('ver:',
-                 |  CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000 < 85
+                 |WHEN ${md5Bits("ver", "event_id", 6)} % 1000 < 85
                  |THEN 'v1' ELSE 'v2' END""".stripMargin).as("version"))
       val perWeek = calls.groupBy("week", "version")
         .agg(count(lit(1)).as("calls"))
@@ -809,12 +803,12 @@ object Round13bOps extends Family {
         .select(col("event_id"), (col("event_id") % 24).as("annotator"))
         .withColumn("is_gold", col("event_id") % 5 === 0)
         .withColumn("gold_answer", expr(
-          "CAST(conv(substring(md5(concat('gold:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 4"))
+          s"${md5Bits("gold", "event_id", 6)} % 4"))
         .withColumn("answer",
           when(col("is_gold") && col("annotator") % 3 =!= 0 &&
             col("event_id") % 50 =!= 45, col("gold_answer"))
             .otherwise(expr(
-              "CAST(conv(substring(md5(concat('ans:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 4")))
+              s"${md5Bits("ans", "event_id", 6)} % 4")))
       val perAnnotator = tasks.groupBy("annotator")
         .agg(sum(when(col("is_gold"), 1L).otherwise(0L)).as("golds"),
           sum(when(col("is_gold") && col("answer") === col("gold_answer"), 1L)
@@ -1028,10 +1022,9 @@ object Round13bOps extends Family {
         |GROUP BY 1 ORDER BY o.service""".stripMargin,
 
     "llm_rag_budget_pack" ->
-      """WITH cand AS (
+      s"""WITH cand AS (
         |  SELECT t.q, d.doc_id, d.n_chars // 4 AS tok,
-        |    ('0x' || substring(md5(CAST(t.q AS VARCHAR) || ':' ||
-        |      CAST(d.doc_id AS VARCHAR)), 1, 6))::BIGINT % 1000 AS score
+        |    ${duckMd5Bits("CAST(t.q AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)", 6)} % 1000 AS score
         |  FROM documents d CROSS JOIN (SELECT range AS q FROM range(0, 64)) t),
         |packed AS (
         |  SELECT q, tok,
@@ -1073,10 +1066,10 @@ object Round13bOps extends Family {
         |FROM c GROUP BY 1 ORDER BY service""".stripMargin,
 
     "llm_wer_eval" ->
-      """WITH e AS (
+      raw"""WITH e AS (
         |  SELECT doc_id, source,
         |    array_to_string(list_transform(str_split(text, ' ')[1:12],
-        |      w -> chr(CAST(65 + ('0x' || substring(md5(w), 1, 4))::BIGINT % 26 AS INT))),
+        |      w -> chr(CAST(65 + ${duckMd5Bits("w", 4)} % 26 AS INT))),
         |      '') AS enc,
         |    LEAST(len(str_split(text, ' ')), 12) AS n_words,
         |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'drop3'
@@ -1179,10 +1172,10 @@ object Round13bOps extends Family {
         |FROM per_cue GROUP BY 1 ORDER BY principal""".stripMargin,
 
     "llm_crawl_frontier_plan" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT doc_id, source,
         |    source || '-' || CAST(doc_id % 50 AS VARCHAR) AS host,
-        |    ('0x' || substring(md5('url:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
+        |    ${duckMd5Bits("url", "doc_id", 6)}
         |      % 1000 AS prio
         |  FROM documents),
         |r AS (
@@ -1199,10 +1192,10 @@ object Round13bOps extends Family {
         |FROM r GROUP BY 1 ORDER BY source""".stripMargin,
 
     "llm_moe_router_balance" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT event_id, event_id % 4 AS layer,
-        |    ('0x' || substring(md5('e1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 16 AS e1,
-        |    ('0x' || substring(md5('e2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 15 AS e2r
+        |    ${duckMd5Bits("e1", "event_id", 6)} % 16 AS e1,
+        |    ${duckMd5Bits("e2", "event_id", 6)} % 15 AS e2r
         |  FROM events),
         |r AS (
         |  SELECT layer, e1 AS expert FROM g
@@ -1225,15 +1218,14 @@ object Round13bOps extends Family {
         |FROM agg ORDER BY layer""".stripMargin,
 
     "mm_frame_dedup_temporal" ->
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    (CAST(ROW_NUMBER() OVER (PARTITION BY user_id
         |      ORDER BY epoch_us(ts), event_id) AS BIGINT) - 1) // 5 AS shot
         |  FROM events),
         |f AS (
         |  SELECT user_id, event_id, ts_us,
-        |    xor(('0x' || substring(md5('ph:' || CAST(user_id AS VARCHAR) || ':' ||
-        |      CAST(shot AS VARCHAR)), 1, 15))::BIGINT,
+        |    xor(${duckMd5Bits("'ph:' || CAST(user_id AS VARCHAR) || ':' || CAST(shot AS VARCHAR)", 15)},
         |      event_id % 3) AS phash
         |  FROM sh),
         |l AS (
@@ -1292,10 +1284,10 @@ object Round13bOps extends Family {
         |FROM j GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
 
     "service_api_version_adoption" ->
-      """WITH calls AS (
+      s"""WITH calls AS (
         |  SELECT epoch_us(ts) // 604800000000 AS week,
-        |    CASE WHEN ('0x' || substring(md5('ver:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 1000 < 5 THEN 'v0'
-        |         WHEN ('0x' || substring(md5('ver:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 1000 < 85 THEN 'v1'
+        |    CASE WHEN ${duckMd5Bits("ver", "event_id", 6)} % 1000 < 5 THEN 'v0'
+        |         WHEN ${duckMd5Bits("ver", "event_id", 6)} % 1000 < 85 THEN 'v1'
         |         ELSE 'v2' END AS version
         |  FROM events),
         |pw AS (
@@ -1433,11 +1425,11 @@ object Round13bOps extends Family {
         |FROM r GROUP BY 1 ORDER BY priority""".stripMargin,
 
     "llm_annotator_qualification" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT event_id, event_id % 24 AS annotator,
         |    event_id % 5 = 0 AS is_gold,
-        |    ('0x' || substring(md5('gold:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 4 AS gold_answer,
-        |    ('0x' || substring(md5('ans:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 4 AS noise
+        |    ${duckMd5Bits("gold", "event_id", 6)} % 4 AS gold_answer,
+        |    ${duckMd5Bits("ans", "event_id", 6)} % 4 AS noise
         |  FROM events),
         |a AS (
         |  SELECT annotator, is_gold, gold_answer,

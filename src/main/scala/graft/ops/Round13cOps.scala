@@ -55,7 +55,7 @@ object Round13cOps extends Family {
         .select(col("user_id"), col("event_id"))
         .withColumn("flag", (col("event_id") % 3).as("flag"))
         .withColumn("assigned", expr(
-          "CAST(conv(substring(md5(concat(CAST(user_id AS STRING), ':f', CAST(flag AS STRING))), 1, 6), 16, 10) AS BIGINT) % 2"))
+          s"${md5Bits("concat(CAST(user_id AS STRING), ':f', CAST(flag AS STRING))", 6)} % 2"))
         .withColumn("seen",
           when(col("event_id") % 97 === 13, lit(1L) - col("assigned"))
             .otherwise(col("assigned")))
@@ -320,14 +320,14 @@ object Round13cOps extends Family {
     "join_ip_range_lookup" -> ((s, d) => {
       val ranges = s.range(256).select(col("id").as("block"))
         .withColumn("split_at", expr(
-          "CAST(conv(substring(md5(concat('ip:', CAST(block AS STRING))), 1, 6), 16, 10) AS BIGINT) % 16777216"))
+          s"${md5Bits("ip", "block", 6)} % 16777216"))
         .select(
           struct(col("block"), (col("block") * 16777216L).as("lo"),
             (col("block") * 16777216L + col("split_at")).as("hi"),
             concat(lit("as"), (col("block") % 5).cast("string")).as("owner")).as("r"))
         .unionByName(s.range(256).select(col("id").as("block"))
           .withColumn("split_at", expr(
-            "CAST(conv(substring(md5(concat('ip:', CAST(block AS STRING))), 1, 6), 16, 10) AS BIGINT) % 16777216"))
+            s"${md5Bits("ip", "block", 6)} % 16777216"))
           .where(col("block") % 8 =!= 3) // every 8th block's upper half is reserved
           .select(struct(col("block"),
             (col("block") * 16777216L + col("split_at")).as("lo"),
@@ -337,7 +337,7 @@ object Round13cOps extends Family {
           col("r.hi").as("hi"), col("r.owner").as("owner"))
       val probes = Tables.events(s, d)
         .select(col("event_id"), expr(
-          "CAST(conv(substring(md5(concat('addr:', CAST(event_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 4294967296").as("ip"))
+          s"${md5Bits("addr", "event_id", 8)} % 4294967296").as("ip"))
         .withColumn("block", expr("ip DIV 16777216"))
       probes.join(broadcast(ranges), Seq("block"), "left")
         .withColumn("hit",
@@ -368,7 +368,7 @@ object Round13cOps extends Family {
                  |  (CASE WHEN doc_id % 6 = 1 THEN 1 ELSE 0 END) AS STRING)))"""
             .stripMargin).as("fp"))
         .withColumn("side", when(expr(
-          "CAST(conv(substring(md5(concat('split:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10") === 7,
+          s"${md5Bits("split", "doc_id", 6)} % 10") === 7,
           lit("test")).otherwise(lit("train")))
       val clusters = split.groupBy("fp")
         .agg(expr("min_by(source, doc_id)").as("source"),
@@ -397,7 +397,7 @@ object Round13cOps extends Family {
     "fn_consent_bitmask_decode" -> ((s, d) => {
       val masks = Tables.customer(s, d)
         .select(col("c_custkey"),
-          (expr("CAST(conv(substring(md5(concat('cm:', CAST(c_custkey AS STRING))), 1, 4), 16, 10) AS BIGINT) % 4096")
+          (expr(s"${md5Bits("cm", "c_custkey", 4)} % 4096")
             .bitwiseOR(lit(1L))).bitwiseAND(lit(4087L)).as("mask"))
       masks
         .withColumn("purpose", explode(expr("sequence(0, 11)")))
@@ -421,7 +421,7 @@ object Round13cOps extends Family {
         .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
         .withColumn("day", expr("ts_us DIV 86400000000"))
         .withColumn("rung", expr(
-          "element_at(array(240, 360, 480, 720, 1080), CAST(CAST(conv(substring(md5(concat('br:', CAST(event_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 5 AS INT) + 1)"))
+          s"element_at(array(240, 360, 480, 720, 1080), CAST(${md5Bits("br", "event_id", 4)} % 5 AS INT) + 1)"))
         .withColumn("switched",
           when(col("rung") =!= lag("rung", 1).over(wSess), 1L).otherwise(0L))
         .withColumn("rebuffer",
@@ -487,7 +487,7 @@ object Round13cOps extends Family {
         .groupBy("txn")
         .agg(count(lit(1)).as("observed_steps"))
         .withColumn("h", expr(
-          "CAST(conv(substring(md5(concat('saga:', CAST(txn AS STRING))), 1, 6), 16, 10) AS BIGINT)"))
+          md5Bits("saga", "txn", 6)))
         .withColumn("failed", col("h") % 4 === 0)
         .withColumn("fail_at", when(col("failed"), col("h") % 6 + 1))
         .withColumn("executed",
@@ -616,7 +616,7 @@ object Round13cOps extends Family {
     "warehouse_dead_column_audit" -> ((s, d) => {
       Tables.events(s, d)
         .select(col("event_id"), expr("ts_us DIV 604800000000").as("week"),
-          expr("CAST(conv(substring(md5(concat('q:', CAST(event_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 65536")
+          expr(s"${md5Bits("q", "event_id", 4)} % 65536")
             .bitwiseAND(lit(8191L)).as("mask"))
         .withColumn("column_id", explode(expr("sequence(0, 15)")))
         .withColumn("referenced", expr("shiftright(mask, column_id) % 2"))
@@ -756,7 +756,7 @@ object Round13cOps extends Family {
         .select(col("user_id"), col("event_id"), col("ts_us"))
         .withColumn("node", col("user_id") % 8)
         .withColumn("offset", col("node") * 1500L - 4000L +
-          expr("CAST(conv(substring(md5(concat('j:', CAST(event_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 1000"))
+          expr(s"${md5Bits("j", "event_id", 4)} % 1000"))
         .withColumn("recv_us", col("ts_us") + col("offset"))
         .withColumn("crossed",
           when(expr("recv_us DIV 1000000") =!= expr("ts_us DIV 1000000"), 1L)
@@ -802,9 +802,9 @@ object Round13cOps extends Family {
       Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("conf_milli", expr(
-          "CAST(conv(substring(md5(concat('rc:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("rc", "event_id", 6)} % 1000"))
         .withColumn("large_wins", expr(
-          "CAST(conv(substring(md5(concat('rq:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000") <
+          s"${md5Bits("rq", "event_id", 6)} % 1000") <
           (lit(900L) - col("conf_milli")))
         .withColumn("threshold", explode(expr("array(200, 400, 600, 800)")))
         .withColumn("escalated", col("conf_milli") < col("threshold"))
@@ -875,7 +875,7 @@ object Round13cOps extends Family {
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .withColumn("flagged", expr(
-          "CAST(conv(substring(md5(concat('tox:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 50") === 7L)
+          s"${md5Bits("tox", "doc_id", 6)} % 50") === 7L)
       val counts = base.groupBy("source", "lang").agg(count(lit(1)).as("n"))
       val wDom = Window.partitionBy("source")
         .orderBy(col("n").desc, col("lang").desc)
@@ -1168,7 +1168,7 @@ object Round13cOps extends Family {
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"))
         .withColumn("score_milli", expr(
-          "CAST(conv(substring(md5(concat('al:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("al", "doc_id", 6)} % 1000"))
         .withColumn("uncertainty", abs(col("score_milli") - 500L))
         .withColumn("selected", row_number().over(wU) <= 25)
         .groupBy("source")
@@ -1335,10 +1335,9 @@ object Round13cOps extends Family {
         |FROM sw GROUP BY 1 ORDER BY principal""".stripMargin,
 
     "service_ab_exposure_integrity" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT user_id, event_id, event_id % 3 AS flag,
-        |    ('0x' || substring(md5(CAST(user_id AS VARCHAR) || ':f' ||
-        |      CAST(event_id % 3 AS VARCHAR)), 1, 6))::BIGINT % 2 AS assigned
+        |    ${duckMd5Bits("CAST(user_id AS VARCHAR) || ':f' || CAST(event_id % 3 AS VARCHAR)", 6)} % 2 AS assigned
         |  FROM events),
         |seen AS (
         |  SELECT flag, user_id,
@@ -1543,9 +1542,9 @@ object Round13cOps extends Family {
         |FROM r GROUP BY 1 ORDER BY week""".stripMargin,
 
     "join_ip_range_lookup" ->
-      """WITH blocks AS (
+      s"""WITH blocks AS (
         |  SELECT b.range AS block,
-        |    ('0x' || substring(md5('ip:' || CAST(b.range AS VARCHAR)), 1, 6))::BIGINT
+        |    ${duckMd5Bits("ip", "b.range", 6)}
         |      % 16777216 AS split_at
         |  FROM range(0, 256) b),
         |ranges AS (
@@ -1560,7 +1559,7 @@ object Round13cOps extends Family {
         |  FROM blocks WHERE block % 8 <> 3),
         |probes AS (
         |  SELECT event_id,
-        |    ('0x' || substring(md5('addr:' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT
+        |    ${duckMd5Bits("addr", "event_id", 8)}
         |      % 4294967296 AS ip
         |  FROM events),
         |m AS (
@@ -1574,11 +1573,11 @@ object Round13cOps extends Family {
         |FROM m GROUP BY 1 ORDER BY owner""".stripMargin,
 
     "llm_split_leakage_audit" ->
-      """WITH sp AS (
+      s"""WITH sp AS (
         |  SELECT doc_id, source,
         |    md5('fp:' || CAST(doc_id -
         |      (CASE WHEN doc_id % 6 = 1 THEN 1 ELSE 0 END) AS VARCHAR)) AS fp,
-        |    CASE WHEN ('0x' || substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 10 = 7
+        |    CASE WHEN ${duckMd5Bits("split", "doc_id", 6)} % 10 = 7
         |      THEN 'test' ELSE 'train' END AS side
         |  FROM documents),
         |cl AS (
@@ -1598,9 +1597,9 @@ object Round13cOps extends Family {
         |FROM lk GROUP BY 1 ORDER BY source""".stripMargin,
 
     "fn_consent_bitmask_decode" ->
-      """WITH m AS (
+      s"""WITH m AS (
         |  SELECT c_custkey,
-        |    ((('0x' || substring(md5('cm:' || CAST(c_custkey AS VARCHAR)), 1, 4))::BIGINT
+        |    ((${duckMd5Bits("cm", "c_custkey", 4)}
         |      % 4096) | 1) & 4087 AS mask
         |  FROM customer),
         |e AS (
@@ -1613,11 +1612,10 @@ object Round13cOps extends Family {
         |FROM e GROUP BY 1 ORDER BY purpose""".stripMargin,
 
     "mm_playback_qoe" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type,
         |    epoch_us(ts) // 86400000000 AS day,
-        |    ([240, 360, 480, 720, 1080])[CAST(('0x' ||
-        |      substring(md5('br:' || CAST(event_id AS VARCHAR)), 1, 4))::BIGINT
+        |    ([240, 360, 480, 720, 1080])[CAST(${duckMd5Bits("br", "event_id", 4)}
         |      % 5 AS INT) + 1] AS rung
         |  FROM events),
         |l AS (
@@ -1666,11 +1664,11 @@ object Round13cOps extends Family {
         |FROM tagged GROUP BY 1 ORDER BY hop""".stripMargin,
 
     "service_saga_audit" ->
-      """WITH tx AS (
+      s"""WITH tx AS (
         |  SELECT event_id // 6 AS txn, CAST(COUNT(*) AS BIGINT) AS observed_steps
         |  FROM events GROUP BY 1),
         |h AS (
-        |  SELECT *, ('0x' || substring(md5('saga:' || CAST(txn AS VARCHAR)), 1, 6))::BIGINT AS hv
+        |  SELECT *, ${duckMd5Bits("saga", "txn", 6)} AS hv
         |  FROM tx),
         |st AS (
         |  SELECT txn, observed_steps, hv % 4 = 0 AS failed,
@@ -1763,9 +1761,9 @@ object Round13cOps extends Family {
         |FROM sc GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "warehouse_dead_column_audit" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT event_id, epoch_us(ts) // 604800000000 AS week,
-        |    (('0x' || substring(md5('q:' || CAST(event_id AS VARCHAR)), 1, 4))::BIGINT
+        |    (${duckMd5Bits("q", "event_id", 4)}
         |      % 65536) & 8191 AS mask
         |  FROM events),
         |e AS (
@@ -1861,10 +1859,10 @@ object Round13cOps extends Family {
         |FROM sp GROUP BY 1 ORDER BY source""".stripMargin,
 
     "service_clock_skew_audit" ->
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT user_id % 8 AS node, event_id, epoch_us(ts) AS ts_us,
         |    (user_id % 8) * 1500 - 4000 +
-        |    ('0x' || substring(md5('j:' || CAST(event_id AS VARCHAR)), 1, 4))::BIGINT
+        |    ${duckMd5Bits("j", "event_id", 4)}
         |      % 1000 AS off_us
         |  FROM events),
         |c AS (
@@ -1893,11 +1891,11 @@ object Round13cOps extends Family {
         |FROM m ORDER BY event_type""".stripMargin,
 
     "llm_model_router_sweep" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT event_id,
-        |    ('0x' || substring(md5('rc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+        |    ${duckMd5Bits("rc", "event_id", 6)}
         |      % 1000 AS conf_milli,
-        |    ('0x' || substring(md5('rq:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+        |    ${duckMd5Bits("rq", "event_id", 6)}
         |      % 1000 AS q
         |  FROM events),
         |x AS (
@@ -1964,9 +1962,9 @@ object Round13cOps extends Family {
         |FROM st GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "llm_dataset_datasheet" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, source, lang, n_chars,
-        |    ('0x' || substring(md5('tox:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
+        |    ${duckMd5Bits("tox", "doc_id", 6)}
         |      % 50 = 7 AS flagged
         |  FROM documents),
         |counts AS (
@@ -2198,9 +2196,9 @@ object Round13cOps extends Family {
     },
 
     "llm_active_label_selection" ->
-      """WITH sc AS (
+      s"""WITH sc AS (
         |  SELECT doc_id, source,
-        |    abs(('0x' || substring(md5('al:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
+        |    abs(${duckMd5Bits("al", "doc_id", 6)}
         |      % 1000 - 500) AS uncertainty
         |  FROM documents),
         |r AS (

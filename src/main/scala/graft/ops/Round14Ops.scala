@@ -135,10 +135,10 @@ object Round14Ops extends Family {
         .where(col("event_id") % 13 === 4)
         .select(col("event_id"), col("user_id"))
         .withColumn("latency_days", expr(
-          "CAST(conv(substring(md5(concat('dsar:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 45"))
+          s"${md5Bits("dsar", "event_id", 6)} % 45"))
       val ledger = Tables.events(s, d).select(col("user_id")).distinct()
         .withColumn("status", when(expr(
-          "CAST(conv(substring(md5(concat('cst:', CAST(user_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 11") === 3,
+          s"${md5Bits("cst", "user_id", 6)} % 11") === 3,
           lit("restricted")).otherwise(lit("standard")))
       req.join(ledger, Seq("user_id"))
         .withColumn("sla_days",
@@ -175,7 +175,7 @@ object Round14Ops extends Family {
       val probes = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"))
       val nbrExpr =
-        s"CAST(conv(substring(md5(concat('hnsw:', CAST(node AS STRING), ':', CAST(j AS STRING))), 1, 8), 16, 10) AS BIGINT) % $n"
+        s"${md5Bits("concat('hnsw:', CAST(node AS STRING), ':', CAST(j AS STRING))", 8)} % $n"
       def expand(beam: DataFrame): DataFrame =
         beam.select(col("probe_id"), col("node"))
           .withColumn("j", explode(expr("sequence(0, 7)")))
@@ -262,9 +262,9 @@ object Round14Ops extends Family {
       Tables.events(s, d)
         .select((col("user_id") % 4).as("svc"), col("event_id"))
         .withColumn("l1", expr(
-          "CAST(conv(substring(md5(concat('h1:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("h1", "event_id", 6)} % 1000"))
         .withColumn("l2", expr(
-          "CAST(conv(substring(md5(concat('h2:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("h2", "event_id", 6)} % 1000"))
         .withColumn("hedged", col("l1") > 300)
         .withColumn("eff",
           when(col("hedged"), least(col("l1"), col("l2") + 300))
@@ -295,7 +295,7 @@ object Round14Ops extends Family {
         .select((col("event_id") % 4).as("svc"), col("event_id"), col("user_id"))
         .withColumn("canary", col("user_id") % 10 === 0)
         .withColumn("gate", expr(
-          "CAST(conv(substring(md5(concat('ce:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("ce", "event_id", 6)} % 1000"))
         .withColumn("err",
           col("gate") < when(col("canary") && col("svc") === 2, 90L).otherwise(50L))
         .groupBy("svc")
@@ -330,7 +330,7 @@ object Round14Ops extends Family {
         .withColumn("g", expr("k DIV 8"))
         .withColumn("v", col("k") % 8)
         .withColumn("r", expr(
-          "CAST(conv(substring(md5(concat('r:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000")
+          s"${md5Bits("r", "k", 6)} % 1000")
           + when(col("v") === 0, 500L).otherwise(0L))
         .withColumn("n", count(lit(1)).over(wG))
         .withColumn("sum_r", sum("r").over(wG))
@@ -369,7 +369,7 @@ object Round14Ops extends Family {
         .withColumn("hsize", col("h") % 3 + 2)
         .where(col("v") < col("hsize"))
         .withColumn("inc_cents", expr(
-          "CAST(conv(substring(md5(concat('inc:', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 900000 + 100000"))
+          s"${md5Bits("inc", "k", 8)} % 900000 + 100000"))
         .groupBy("h")
         .agg(sum("inc_cents").as("income_cents"),
           count(lit(1)).as("n_members"))
@@ -402,11 +402,11 @@ object Round14Ops extends Family {
     // rollup, linear at any scale.
     "service_deadline_propagation" -> ((s, d) => {
       def hop(i: Int) =
-        s"CAST(conv(substring(md5(concat('hl:', CAST(event_id AS STRING), ':', '$i')), 1, 6), 16, 10) AS BIGINT) % 800"
+        s"${md5Bits(s"concat('hl:', CAST(event_id AS STRING), ':', '$i')", 6)} % 800"
       Tables.events(s, d)
         .select((col("event_id") % 4).as("svc"), col("event_id"))
         .withColumn("dl", expr(
-          "CAST(conv(substring(md5(concat('dl:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 4000 + 1000"))
+          s"${md5Bits("dl", "event_id", 6)} % 4000 + 1000"))
         .withColumn("c1", expr(hop(1)))
         .withColumn("c2", col("c1") + expr(hop(2)))
         .withColumn("c3", col("c2") + expr(hop(3)))
@@ -444,9 +444,9 @@ object Round14Ops extends Family {
         .withColumn("z", col("user_id") % 5)
         .withColumn("p_milli", lit(200L) + col("z") * 150)
         .withColumn("treated", expr(
-          "CAST(conv(substring(md5(concat('t:', CAST(user_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000") < col("p_milli"))
+          s"${md5Bits("t", "user_id", 6)} % 1000") < col("p_milli"))
         .withColumn("y_cents", expr(
-          "CAST(conv(substring(md5(concat('y:', CAST(user_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000")
+          s"${md5Bits("y", "user_id", 6)} % 1000")
           + col("z") * 100 + when(col("treated"), 250L).otherwise(0L))
         .withColumn("w", when(col("treated"), expr("1000000 DIV p_milli"))
           .otherwise(expr("1000000 DIV (1000 - p_milli)")))
@@ -517,7 +517,7 @@ object Round14Ops extends Family {
         .withColumn("segment", col("k") % 5)
         .withColumn("kek_v1", col("k") % 100 < 70)
         .withColumn("rw_gate", expr(
-          "CAST(conv(substring(md5(concat('rw:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000"))
+          s"${md5Bits("rw", "k", 6)} % 1000"))
         .withColumn("rewrapped", col("kek_v1") &&
           col("rw_gate") < when(col("segment") === 3, 100L).otherwise(600L))
         .groupBy("segment")
@@ -576,15 +576,15 @@ object Round14Ops extends Family {
       Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("n_calls", expr(
-          "CAST(conv(substring(md5(concat('tc:', CAST(event_id AS STRING))), 1, 4), 16, 10) AS BIGINT) % 4"))
+          s"${md5Bits("tc", "event_id", 4)} % 4"))
         .where(col("n_calls") > 0)
         .withColumn("i", explode(expr("sequence(1, CAST(n_calls AS INT))")))
         .withColumn("tool", expr(
-          "CAST(conv(substring(md5(concat('tt:', CAST(event_id AS STRING), ':', CAST(i AS STRING))), 1, 6), 16, 10) AS BIGINT) % 6"))
+          s"${md5Bits("concat('tt:', CAST(event_id AS STRING), ':', CAST(i AS STRING))", 6)} % 6"))
         .withColumn("malformed", expr(
-          "CAST(conv(substring(md5(concat('tm:', CAST(event_id AS STRING), ':', CAST(i AS STRING))), 1, 6), 16, 10) AS BIGINT) % 17") === 3)
+          s"${md5Bits("concat('tm:', CAST(event_id AS STRING), ':', CAST(i AS STRING))", 6)} % 17") === 3)
         .withColumn("hard_fail", col("malformed") && expr(
-          "CAST(conv(substring(md5(concat('tr:', CAST(event_id AS STRING), ':', CAST(i AS STRING))), 1, 6), 16, 10) AS BIGINT) % 5") === 0)
+          s"${md5Bits("concat('tr:', CAST(event_id AS STRING), ':', CAST(i AS STRING))", 6)} % 5") === 0)
         .groupBy("tool")
         .agg(count(lit(1)).as("n_calls"),
           sum(when(col("malformed"), 1L).otherwise(0L)).as("n_malformed"),
@@ -720,7 +720,7 @@ object Round14Ops extends Family {
           col("o_custkey").cast("bigint").as("acct"))
         .withColumn("structurer", col("acct") % 37 === 5)
         .withColumn("g", expr(
-          "CAST(conv(substring(md5(concat('am:', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT)"))
+          md5Bits("am", "k", 8)))
         .withColumn("cents",
           when(col("structurer") && col("g") % 10 < 6,
             lit(900000L) + col("g") % 100000)
@@ -792,11 +792,11 @@ object Round14Ops extends Family {
       Tables.events(s, d)
         .select((col("user_id") % 4).as("svc"), col("event_id"))
         .withColumn("l1", expr(
-          "CAST(conv(substring(md5(concat('q1:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 500"))
+          s"${md5Bits("q1", "event_id", 6)} % 500"))
         .withColumn("l2", expr(
-          "CAST(conv(substring(md5(concat('q2:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 500"))
+          s"${md5Bits("q2", "event_id", 6)} % 500"))
         .withColumn("rd", expr(
-          "CAST(conv(substring(md5(concat('qr:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200"))
+          s"${md5Bits("qr", "event_id", 6)} % 200"))
         .withColumn("lag", least(col("l1"), col("l2")))
         .withColumn("stale", col("lag") > col("rd"))
         .groupBy("svc")
@@ -819,7 +819,7 @@ object Round14Ops extends Family {
     // causality bug. One projection + rollup.
     "fn_vector_clock_compare" -> ((s, d) => {
       def a(i: Int) =
-        s"CAST(conv(substring(md5(concat('vc$i:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100 + 10"
+        s"${md5Bits(s"vc$i", "event_id", 6)} % 100 + 10"
       Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("cls", (col("event_id") % 4).cast("int"))
@@ -901,7 +901,7 @@ object Round14Ops extends Family {
         .withColumn("mask", expr(
           "element_at(array(5000L, 1L, 30000L, 2L), CAST(state AS INT) + 1)"))
         .withColumn("draw", expr(
-          "CAST(conv(substring(md5(concat('cd:', CAST(k AS STRING), ':', CAST(i AS STRING))), 1, 8), 16, 10) AS BIGINT) % 50000"))
+          s"${md5Bits("concat('cd:', CAST(k AS STRING), ':', CAST(i AS STRING))", 8)} % 50000"))
         .withColumn("forced", col("draw") >= col("mask"))
         .groupBy("state")
         .agg(count(lit(1)).as("n_steps"),
@@ -1027,9 +1027,9 @@ object Round14Ops extends Family {
         .where(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"))
         .withColumn("cb", expr(
-          "CAST(conv(substring(md5(concat('cb:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 23") === 4)
+          s"${md5Bits("cb", "event_id", 6)} % 23") === 4)
         .withColumn("lag_days", expr(
-          "CAST(conv(substring(md5(concat('cl:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 90"))
+          s"${md5Bits("cl", "event_id", 6)} % 90"))
         .groupBy((col("user_id") % 6).as("cohort"))
         .agg(count(lit(1)).as("n_purchases"),
           sum(when(col("cb"), 1L).otherwise(0L)).as("n_chargebacks"),
@@ -1053,12 +1053,12 @@ object Round14Ops extends Family {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("a", expr(
-          "CAST(conv(substring(md5(concat('an1:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 4"))
+          s"${md5Bits("an1", "k", 6)} % 4"))
         .withColumn("g", expr(
-          "CAST(conv(substring(md5(concat('an2:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10"))
+          s"${md5Bits("an2", "k", 6)} % 10"))
         .withColumn("b", when(col("g") < 7, col("a"))
           .otherwise((col("a") + 1 + expr(
-            "CAST(conv(substring(md5(concat('an3:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3")) % 4))
+            s"${md5Bits("an3", "k", 6)} % 3")) % 4))
       val agg = t.groupBy((col("k") % 3).as("cohort"))
         .agg(count(lit(1)).as("n"),
           sum(when(col("a") === col("b"), 1L).otherwise(0L)).as("agree"),
@@ -1096,11 +1096,11 @@ object Round14Ops extends Family {
         .select(col("doc_id"))
         .withColumn("gold", col("doc_id") % 4)
         .withColumn("flip", expr(
-          "CAST(conv(substring(md5(concat('nl:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100")
+          s"${md5Bits("nl", "doc_id", 6)} % 100")
           < when(col("gold") === 3, 30L).otherwise(10L))
         .withColumn("obs", when(!col("flip"), col("gold"))
           .otherwise((col("gold") + 1 + expr(
-            "CAST(conv(substring(md5(concat('nf:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3")) % 4))
+            s"${md5Bits("nf", "doc_id", 6)} % 3")) % 4))
         .groupBy("gold")
         .agg(count(lit(1)).as("n_items"),
           sum(when(col("flip"), 1L).otherwise(0L)).as("n_flipped"),
@@ -1122,7 +1122,7 @@ object Round14Ops extends Family {
     // rollup.
     "win_forgetting_score" -> ((s, d) => {
       val corr = (e: String) =>
-        s"CAST(conv(substring(md5(concat('fg:', CAST(k AS STRING), ':', CAST($e AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100 < 40 + ($e) * 8"
+        s"${md5Bits(s"concat('fg:', CAST(k AS STRING), ':', CAST($e AS STRING))", 6)} % 100 < 40 + ($e) * 8"
       Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("forget_events", expr(
@@ -1148,7 +1148,7 @@ object Round14Ops extends Family {
        |    SELECT probe_id,
        |      CASE WHEN v = node THEN (v + 1) % (SELECT n FROM nn) ELSE v END AS node
        |    FROM (SELECT probe_id, node,
-       |            ('0x' || substring(md5('hnsw:' || CAST(node AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)), 1, 8))::BIGINT
+       |            ${duckMd5Bits("'hnsw:' || CAST(node AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)}
        |              % (SELECT n FROM nn) AS v
        |          FROM $prev CROSS JOIN range(0, 8) j) q1
        |    UNION ALL SELECT probe_id, node FROM $prev) q2),
@@ -1188,10 +1188,10 @@ object Round14Ops extends Family {
         |FROM g GROUP BY 1 ORDER BY share_size""".stripMargin,
 
     "agg_chargeback_lag" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT user_id % 6 AS cohort,
-        |    ('0x' || substring(md5('cb:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 23 = 4 AS cb,
-        |    ('0x' || substring(md5('cl:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 90 AS lag_days
+        |    ${duckMd5Bits("cb", "event_id", 6)} % 23 = 4 AS cb,
+        |    ${duckMd5Bits("cl", "event_id", 6)} % 90 AS lag_days
         |  FROM events WHERE event_type = 'purchase')
         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_purchases,
         |  CAST(SUM(CASE WHEN cb THEN 1 ELSE 0 END) AS BIGINT) AS n_chargebacks,
@@ -1202,11 +1202,11 @@ object Round14Ops extends Family {
         |FROM p GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "agg_cohen_kappa" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    ('0x' || substring(md5('an1:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 4 AS a,
-        |    ('0x' || substring(md5('an2:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 10 AS g,
-        |    ('0x' || substring(md5('an3:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 3 AS dr
+        |    ${duckMd5Bits("an1", "o_orderkey", 6)} % 4 AS a,
+        |    ${duckMd5Bits("an2", "o_orderkey", 6)} % 10 AS g,
+        |    ${duckMd5Bits("an3", "o_orderkey", 6)} % 3 AS dr
         |  FROM orders),
         |x AS (
         |  SELECT k % 3 AS cohort, a,
@@ -1229,11 +1229,11 @@ object Round14Ops extends Family {
         |FROM m ORDER BY cohort""".stripMargin,
 
     "llm_label_noise_audit" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id % 4 AS gold,
-        |    ('0x' || substring(md5('nl:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100
+        |    ${duckMd5Bits("nl", "doc_id", 6)} % 100
         |      < CASE WHEN doc_id % 4 = 3 THEN 30 ELSE 10 END AS flip,
-        |    ('0x' || substring(md5('nf:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 3 AS dr
+        |    ${duckMd5Bits("nf", "doc_id", 6)} % 3 AS dr
         |  FROM documents),
         |x AS (
         |  SELECT gold, flip,
@@ -1251,7 +1251,7 @@ object Round14Ops extends Family {
 
     "win_forgetting_score" -> {
       def corr(e: String) =
-        s"('0x' || substring(md5('fg:' || CAST(k AS VARCHAR) || ':' || CAST($e AS VARCHAR)), 1, 6))::BIGINT % 100 < 40 + ($e) * 8"
+        s"${duckMd5Bits(s"'fg:' || CAST(k AS VARCHAR) || ':' || CAST($e AS VARCHAR)", 6)} % 100 < 40 + ($e) * 8"
       s"""WITH t AS (
          |  SELECT CAST(o_orderkey AS BIGINT) AS k FROM orders),
          |f AS (
@@ -1268,11 +1268,11 @@ object Round14Ops extends Family {
     },
 
     "llm_constrained_decode_mask" ->
-      """WITH st AS (
+      s"""WITH st AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, i.range AS i,
         |    i.range % 4 AS state,
         |    [5000, 1, 30000, 2][CAST(i.range % 4 AS INT) + 1] AS mask,
-        |    ('0x' || substring(md5('cd:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(i.range AS VARCHAR)), 1, 8))::BIGINT % 50000 AS draw
+        |    ${duckMd5Bits("'cd:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(i.range AS VARCHAR)", 8)} % 50000 AS draw
         |  FROM orders CROSS JOIN range(0, 8) i)
         |SELECT state, CAST(COUNT(*) AS BIGINT) AS n_steps,
         |  CAST(SUM(mask) AS BIGINT) AS mask_mass,
@@ -1321,11 +1321,11 @@ object Round14Ops extends Family {
         |FROM a ORDER BY shard""".stripMargin,
 
     "service_quorum_staleness" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT user_id % 4 AS svc,
-        |    ('0x' || substring(md5('q1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 500 AS l1,
-        |    ('0x' || substring(md5('q2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 500 AS l2,
-        |    ('0x' || substring(md5('qr:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 200 AS rd
+        |    ${duckMd5Bits("q1", "event_id", 6)} % 500 AS l1,
+        |    ${duckMd5Bits("q2", "event_id", 6)} % 500 AS l2,
+        |    ${duckMd5Bits("qr", "event_id", 6)} % 200 AS rd
         |  FROM events),
         |x AS (SELECT svc, LEAST(l1, l2) AS lag, rd FROM r)
         |SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_reads,
@@ -1339,11 +1339,11 @@ object Round14Ops extends Family {
         |FROM x GROUP BY 1 ORDER BY svc""".stripMargin,
 
     "fn_vector_clock_compare" ->
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT CAST(event_id % 4 AS INT) AS cls,
-        |    ('0x' || substring(md5('vc1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 100 + 10 AS a1,
-        |    ('0x' || substring(md5('vc2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 100 + 10 AS a2,
-        |    ('0x' || substring(md5('vc3:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 100 + 10 AS a3
+        |    ${duckMd5Bits("vc1", "event_id", 6)} % 100 + 10 AS a1,
+        |    ${duckMd5Bits("vc2", "event_id", 6)} % 100 + 10 AS a2,
+        |    ${duckMd5Bits("vc3", "event_id", 6)} % 100 + 10 AS a3
         |  FROM events),
         |b AS (
         |  SELECT cls, a1, a2, a3,
@@ -1422,9 +1422,9 @@ object Round14Ops extends Family {
         |GROUP BY 1 ORDER BY wl_name""".stripMargin,
 
     "agg_txn_structuring" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_custkey AS BIGINT) AS acct,
-        |    ('0x' || substring(md5('am:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS g
+        |    ${duckMd5Bits("am", "o_orderkey", 8)} AS g
         |  FROM orders),
         |a AS (
         |  SELECT acct,
@@ -1475,18 +1475,18 @@ object Round14Ops extends Family {
         |FROM per GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "llm_tool_call_audit" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT event_id,
-        |    ('0x' || substring(md5('tc:' || CAST(event_id AS VARCHAR)), 1, 4))::BIGINT % 4 AS n_calls
+        |    ${duckMd5Bits("tc", "event_id", 4)} % 4 AS n_calls
         |  FROM events),
         |c AS (
         |  SELECT event_id, i.range + 1 AS i FROM t
         |  CROSS JOIN range(0, 3) i WHERE i.range + 1 <= n_calls),
         |x AS (
         |  SELECT
-        |    ('0x' || substring(md5('tt:' || CAST(event_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 6))::BIGINT % 6 AS tool,
-        |    ('0x' || substring(md5('tm:' || CAST(event_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 6))::BIGINT % 17 = 3 AS malformed,
-        |    ('0x' || substring(md5('tr:' || CAST(event_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 6))::BIGINT % 5 = 0 AS retry_dies
+        |    ${duckMd5Bits("'tt:' || CAST(event_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 6)} % 6 AS tool,
+        |    ${duckMd5Bits("'tm:' || CAST(event_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 6)} % 17 = 3 AS malformed,
+        |    ${duckMd5Bits("'tr:' || CAST(event_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 6)} % 5 = 0 AS retry_dies
         |  FROM c)
         |SELECT tool, CAST(COUNT(*) AS BIGINT) AS n_calls,
         |  CAST(SUM(CASE WHEN malformed THEN 1 ELSE 0 END) AS BIGINT) AS n_malformed,
@@ -1567,11 +1567,11 @@ object Round14Ops extends Family {
         |FROM f GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "warehouse_key_rotation_audit" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    CAST(o_orderkey AS BIGINT) % 5 AS segment,
         |    o_orderkey % 100 < 70 AS kek_v1,
-        |    ('0x' || substring(md5('rw:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 1000 AS rw_gate
+        |    ${duckMd5Bits("rw", "o_orderkey", 6)} % 1000 AS rw_gate
         |  FROM orders),
         |w AS (
         |  SELECT segment, kek_v1,
@@ -1616,11 +1616,11 @@ object Round14Ops extends Family {
         |FROM o GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "agg_household_equivalence" ->
-      """WITH m AS (
+      s"""WITH m AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k, c_custkey // 4 AS h,
         |    CAST(c_custkey AS BIGINT) % 4 AS v,
         |    (c_custkey // 4) % 3 + 2 AS hsize,
-        |    ('0x' || substring(md5('inc:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT
+        |    ${duckMd5Bits("inc", "c_custkey", 8)}
         |      % 900000 + 100000 AS inc_cents
         |  FROM customer),
         |hh AS (
@@ -1643,13 +1643,13 @@ object Round14Ops extends Family {
         |FROM eq GROUP BY 1 ORDER BY household_size""".stripMargin,
 
     "service_deadline_propagation" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT event_id % 4 AS svc,
-        |    ('0x' || substring(md5('dl:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 4000 + 1000 AS dl,
-        |    ('0x' || substring(md5('hl:' || CAST(event_id AS VARCHAR) || ':1'), 1, 6))::BIGINT % 800 AS l1,
-        |    ('0x' || substring(md5('hl:' || CAST(event_id AS VARCHAR) || ':2'), 1, 6))::BIGINT % 800 AS l2,
-        |    ('0x' || substring(md5('hl:' || CAST(event_id AS VARCHAR) || ':3'), 1, 6))::BIGINT % 800 AS l3,
-        |    ('0x' || substring(md5('hl:' || CAST(event_id AS VARCHAR) || ':4'), 1, 6))::BIGINT % 800 AS l4
+        |    ${duckMd5Bits("dl", "event_id", 6)} % 4000 + 1000 AS dl,
+        |    ${duckMd5Bits("'hl:' || CAST(event_id AS VARCHAR) || ':1'", 6)} % 800 AS l1,
+        |    ${duckMd5Bits("'hl:' || CAST(event_id AS VARCHAR) || ':2'", 6)} % 800 AS l2,
+        |    ${duckMd5Bits("'hl:' || CAST(event_id AS VARCHAR) || ':3'", 6)} % 800 AS l3,
+        |    ${duckMd5Bits("'hl:' || CAST(event_id AS VARCHAR) || ':4'", 6)} % 800 AS l4
         |  FROM events),
         |c AS (
         |  SELECT svc, dl, l1 AS c1, l1 + l2 AS c2, l1 + l2 + l3 AS c3,
@@ -1673,11 +1673,11 @@ object Round14Ops extends Family {
         |FROM f GROUP BY 1 ORDER BY svc""".stripMargin,
 
     "agg_iptw_ate" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT user_id, user_id % 5 AS z, 200 + (user_id % 5) * 150 AS p_milli,
-        |    ('0x' || substring(md5('t:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT % 1000
+        |    ${duckMd5Bits("t", "user_id", 6)} % 1000
         |      < 200 + (user_id % 5) * 150 AS treated,
-        |    ('0x' || substring(md5('y:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT % 1000 AS ybase
+        |    ${duckMd5Bits("y", "user_id", 6)} % 1000 AS ybase
         |  FROM (SELECT DISTINCT user_id FROM events)),
         |v AS (
         |  SELECT z, p_milli, treated,
@@ -1735,10 +1735,10 @@ object Round14Ops extends Family {
          |ORDER BY probe_id""".stripMargin,
 
     "service_hedged_requests" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT user_id % 4 AS svc,
-        |    ('0x' || substring(md5('h1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 1000 AS l1,
-        |    ('0x' || substring(md5('h2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 1000 AS l2
+        |    ${duckMd5Bits("h1", "event_id", 6)} % 1000 AS l1,
+        |    ${duckMd5Bits("h2", "event_id", 6)} % 1000 AS l2
         |  FROM events),
         |e AS (
         |  SELECT svc, l1, l2, l1 > 300 AS hedged,
@@ -1754,9 +1754,9 @@ object Round14Ops extends Family {
         |FROM e GROUP BY 1 ORDER BY svc""".stripMargin,
 
     "service_canary_analysis" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT event_id % 4 AS svc, user_id % 10 = 0 AS canary,
-        |    ('0x' || substring(md5('ce:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 1000 AS gate
+        |    ${duckMd5Bits("ce", "event_id", 6)} % 1000 AS gate
         |  FROM events),
         |e AS (
         |  SELECT svc, canary,
@@ -1782,10 +1782,10 @@ object Round14Ops extends Family {
         |FROM p ORDER BY svc""".stripMargin,
 
     "llm_best_of_n_select" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey // 8 AS g,
         |    CAST(o_orderkey AS BIGINT) % 8 AS v,
-        |    ('0x' || substring(md5('r:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 1000
+        |    ${duckMd5Bits("r", "o_orderkey", 6)} % 1000
         |      + CASE WHEN o_orderkey % 8 = 0 THEN 500 ELSE 0 END AS r
         |  FROM orders),
         |w AS (
@@ -1888,13 +1888,13 @@ object Round14Ops extends Family {
         |FROM hh GROUP BY 1 ORDER BY household_size""".stripMargin,
 
     "warehouse_dsar_sla" ->
-      """WITH req AS (
+      s"""WITH req AS (
         |  SELECT event_id, user_id,
-        |    ('0x' || substring(md5('dsar:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 45 AS latency_days
+        |    ${duckMd5Bits("dsar", "event_id", 6)} % 45 AS latency_days
         |  FROM events WHERE event_id % 13 = 4),
         |led AS (
         |  SELECT user_id,
-        |    CASE WHEN ('0x' || substring(md5('cst:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT % 11 = 3
+        |    CASE WHEN ${duckMd5Bits("cst", "user_id", 6)} % 11 = 3
         |      THEN 'restricted' ELSE 'standard' END AS status
         |  FROM (SELECT DISTINCT user_id FROM events)),
         |j AS (

@@ -145,7 +145,7 @@ object Round15Ops extends Family {
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val nTot = e.agg(count(lit(1)).cast("double").as("n_tot"))
       val cent = e.crossJoin(broadcast(nTot))
-        .where(expr("CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT)")
+        .where(expr(md5Bits("CAST(vec_id AS STRING)", 8))
           .cast("double") < lit(4294967296.0) / sqrt(col("n_tot")))
         .select(col("vec_id").as("cid"), col("emb").as("cemb"))
       val wA = Window.partitionBy("vec_id").orderBy(desc("ccos"), col("cid"))
@@ -304,7 +304,7 @@ object Round15Ops extends Family {
         beam.select(col("probe_id"), col("node"))
           .withColumn("j", explode(expr(s"sequence(0, ${deg - 1})")))
           .withColumn("v", expr(
-            s"$stride * (CAST(conv(substring(md5(concat('hl$layer:', CAST(node AS STRING), ':', CAST(j AS STRING))), 1, 8), 16, 10) AS BIGINT) % $cnt)"))
+            s"$stride * (${md5Bits(s"concat('hl$layer:', CAST(node AS STRING), ':', CAST(j AS STRING))", 8)} % $cnt)"))
           .select(col("probe_id"),
             when(col("v") === col("node"),
               expr(s"$stride * ((node DIV $stride + 1) % $cnt)"))
@@ -405,7 +405,7 @@ object Round15Ops extends Family {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"))
         .withColumn("cents", expr(
-          "CAST(conv(substring(md5(concat('amt:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000"))
+          s"${md5Bits("amt", "event_id", 6)} % 100000"))
       val organic = ev.where(col("event_id") % 29 =!= 11)
         .select(concat(lit("u"), col("user_id").cast("string")).as("src"),
           expr("md5(concat('org:', CAST(event_id AS STRING)))").as("dst"),
@@ -457,21 +457,21 @@ object Round15Ops extends Family {
       val items = Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("key", expr(
-          """CASE WHEN event_id % 3 < 2 THEN concat('hh', CAST(event_id % 5 AS STRING))
+          s"""CASE WHEN event_id % 3 < 2 THEN concat('hh', CAST(event_id % 5 AS STRING))
             |  WHEN event_id % 997 = 5 THEN 'rare'
-            |  ELSE concat('k', CAST(CAST(conv(substring(md5(concat('ck:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 5000 AS STRING))
+            |  ELSE concat('k', CAST(${md5Bits("ck", "event_id", 6)} % 5000 AS STRING))
             |END""".stripMargin))
         .localCheckpoint() // sketch build + truth both fold over it
       val sketch = items
         .withColumn("i", explode(expr("sequence(0, 3)")))
         .withColumn("slot", expr(
-          "CAST(conv(substring(md5(concat('cm', CAST(i AS STRING), ':', key)), 1, 8), 16, 10) AS BIGINT) % 256"))
+          s"${md5Bits("concat('cm', CAST(i AS STRING), ':', key)", 8)} % 256"))
         .groupBy("i", "slot").agg(count(lit(1)).as("cnt"))
       val probeKeys = array((0 until 5).map(h => lit(s"hh$h")) :+ lit("rare"): _*)
       val probes = s.range(1).select(explode(probeKeys).as("key"))
         .withColumn("i", explode(expr("sequence(0, 3)")))
         .withColumn("slot", expr(
-          "CAST(conv(substring(md5(concat('cm', CAST(i AS STRING), ':', key)), 1, 8), 16, 10) AS BIGINT) % 256"))
+          s"${md5Bits("concat('cm', CAST(i AS STRING), ':', key)", 8)} % 256"))
       val estimates = probes.join(sketch, Seq("i", "slot"))
         .groupBy("key").agg(min("cnt").as("estimate"))
       val truth = items.groupBy("key").agg(count(lit(1)).as("true_count"))
@@ -514,7 +514,7 @@ object Round15Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("qi", (col("k") % 8).cast("int"))
         .withColumn("g", expr(
-          "CAST(conv(substring(md5(concat('sv:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT)"))
+          md5Bits("sv", "k", 6)))
         .withColumn("sv",
           when(col("qi") === 3 && col("g") % 100 < 70, lit(0L))
             .otherwise(col("g") % 5))
@@ -556,7 +556,7 @@ object Round15Ops extends Family {
         .withColumn("cents",
           lit(10000L) + col("b") * 200L +
             when(col("b") >= 24, lit(5000L) + (col("b") - 24) * 300L).otherwise(0L) +
-            expr("CAST(conv(substring(md5(concat('n:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200"))
+            expr(s"${md5Bits("n", "event_id", 6)} % 200"))
         .groupBy("cohort", "b")
         .agg(expr("(SUM(cents) * 1000) DIV COUNT(*)").as("y"))
       byBucket
@@ -588,9 +588,9 @@ object Round15Ops extends Family {
         .withColumn("b", (col("event_id") % 24).cast("bigint"))
         .withColumn("cents",
           lit(10000L) + col("b") * 100L +
-            expr("CAST(conv(substring(md5(concat('lv:', CAST(user_id % 8 AS STRING))), 1, 6), 16, 10) AS BIGINT) % 2000") +
+            expr(s"${md5Bits("lv", "user_id % 8", 6)} % 2000") +
             when(col("unit") === 0 && col("b") >= 12, 4000L).otherwise(0L) +
-            expr("CAST(conv(substring(md5(concat('sc:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200"))
+            expr(s"${md5Bits("sc", "event_id", 6)} % 200"))
         .groupBy("unit", "b")
         .agg(expr("(SUM(cents) * 1000) DIV COUNT(*)").as("y"))
         .localCheckpoint() // treated series + donor sweep both read it
@@ -631,9 +631,9 @@ object Round15Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("segment", (col("k") % 4).cast("int"))
         .withColumn("treated", expr(
-          "CAST(conv(substring(md5(concat('tr:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 2 = 1"))
+          s"${md5Bits("tr", "k", 6)} % 2 = 1"))
         .withColumn("flip", expr(
-          "CAST(conv(substring(md5(concat('fl:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 = 0"))
+          s"${md5Bits("fl", "k", 6)} % 10 = 0"))
         .withColumn("base_resp",
           when(col("segment") === 0, lit(true))
             .when(col("segment") === 1, col("treated"))
@@ -699,7 +699,7 @@ object Round15Ops extends Family {
       Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 4).as("svc"))
         .withColumn("failed", expr(
-          "CAST(conv(substring(md5(concat('rf:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100") <
+          s"${md5Bits("rf", "event_id", 6)} % 100") <
           when(col("svc") === 2, 35L).otherwise(15L))
         .groupBy("svc")
         .agg(count(lit(1)).as("n_requests"),
@@ -722,7 +722,7 @@ object Round15Ops extends Family {
       Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 4).as("svc"))
         .withColumn("lat_ms", expr(
-          "CAST(conv(substring(md5(concat('ap:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 2000") +
+          s"${md5Bits("ap", "event_id", 6)} % 2000") +
           when(col("svc") === 3, 800L).otherwise(0L))
         .groupBy("svc")
         .agg(count(lit(1)).as("n_requests"),
@@ -748,17 +748,17 @@ object Round15Ops extends Family {
       val t = Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 8).as("shard"))
         .withColumn("v_latest", expr(
-          "CAST(conv(substring(md5(concat('vw:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 50 + 10"))
+          s"${md5Bits("vw", "event_id", 6)} % 50 + 10"))
       // replica r's version: latest unless the md5 plant says it lags
       def vr(r: Int) = when(expr(
-        s"CAST(conv(substring(md5(concat('lag$r:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % ${3 + r}") === 0,
+        s"${md5Bits(s"lag$r", "event_id", 6)} % ${3 + r}") === 0,
         col("v_latest") - (expr(
-          s"CAST(conv(substring(md5(concat('gap$r:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 5") + 1))
+          s"${md5Bits(s"gap$r", "event_id", 6)} % 5") + 1))
         .otherwise(col("v_latest"))
       val read = t
         .withColumn("r0", vr(0)).withColumn("r1", vr(1)).withColumn("r2", vr(2))
         .withColumn("pick", expr(
-          "CAST(conv(substring(md5(concat('pk:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3"))
+          s"${md5Bits("pk", "event_id", 6)} % 3"))
         // R=2: contacted pair excludes replica `pick`
         .withColumn("va", when(col("pick") === 0, col("r1")).otherwise(col("r0")))
         .withColumn("vb", when(col("pick") === 2, col("r1")).otherwise(col("r2")))
@@ -785,15 +785,15 @@ object Round15Ops extends Family {
       val keys = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("leaf", expr(
-          "CAST(conv(substring(md5(concat('mk:', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 64"))
+          s"${md5Bits("mk", "k", 8)} % 64"))
         .withColumn("va", expr(
-          "CAST(conv(substring(md5(concat('mv:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT)"))
+          md5Bits("mv", "k", 6)))
         .withColumn("vb",
           when(col("k") % 16 === 9, col("va") + 1).otherwise(col("va")))
         .withColumn("ha", expr(
-          "CAST(conv(substring(md5(concat('mh:', CAST(k AS STRING), ':', CAST(va AS STRING))), 1, 12), 16, 10) AS BIGINT) % 1099511627776"))
+          s"${md5Bits("concat('mh:', CAST(k AS STRING), ':', CAST(va AS STRING))", 12)} % 1099511627776"))
         .withColumn("hb", expr(
-          "CAST(conv(substring(md5(concat('mh:', CAST(k AS STRING), ':', CAST(vb AS STRING))), 1, 12), 16, 10) AS BIGINT) % 1099511627776"))
+          s"${md5Bits("concat('mh:', CAST(k AS STRING), ':', CAST(vb AS STRING))", 12)} % 1099511627776"))
         .localCheckpoint() // leaf digests + transfer census share it
       val leaves = keys.groupBy("leaf")
         .agg(expr("SUM(ha) % 1099511627776").as("da"),
@@ -837,9 +837,9 @@ object Round15Ops extends Family {
         .select(col("event_id"), (col("user_id") % 7).as("key"))
         .withColumn("node", (col("event_id") % 3).cast("int"))
         .withColumn("isP", expr(
-          "CAST(conv(substring(md5(concat('pn:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 4 <> 0"))
+          s"${md5Bits("pn", "event_id", 6)} % 4 <> 0"))
       def sees(view: Int) = col("node") === view || expr(
-        s"CAST(conv(substring(md5(concat('sv$view:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 7")
+        s"${md5Bits(s"sv$view", "event_id", 6)} % 10 < 7")
       val perNode = ev.groupBy("key", "node")
         .agg(
           sum(when(col("isP"), 1L).otherwise(0L)).as("tp"),
@@ -875,11 +875,11 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("variant", (col("k") % 4).cast("int"))
         .withColumn("len", expr(
-          "CAST(conv(substring(md5(concat('cl:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 400 + 100"))
+          s"${md5Bits("cl", "k", 6)} % 400 + 100"))
         .withColumn("reward_milli",
           when(col("variant") === 2, lit(200L) + col("len") * 2L)
             .otherwise(expr(
-              "CAST(conv(substring(md5(concat('rw:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000")))
+              s"${md5Bits("rw", "k", 6)} % 1000")))
       t.groupBy("variant")
         .agg(count(lit(1)).as("n_pairs"),
           expr("""CAST(CAST(COUNT(*) AS DECIMAL(38,0)) * SUM(len * reward_milli)
@@ -911,14 +911,14 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("q"))
         .withColumn("slot", explode(expr("sequence(0, 11)")))
         .withColumn("chunk", when(col("slot") < 4,
-          expr("CAST(conv(substring(md5(concat('rc:', CAST(q AS STRING), ':', CAST(slot AS STRING))), 1, 8), 16, 10) AS BIGINT) % 50"))
+          expr(s"${md5Bits("concat('rc:', CAST(q AS STRING), ':', CAST(slot AS STRING))", 8)} % 50"))
           .otherwise(expr(
-            "50 + CAST(conv(substring(md5(concat('rc:', CAST(q AS STRING), ':', CAST(slot AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100000")))
+            s"50 + ${md5Bits("concat('rc:', CAST(q AS STRING), ':', CAST(slot AS STRING))", 8)} % 100000")))
         .withColumn("cohort", (col("q") % 4).cast("int"))
       val perChunk = ret.groupBy("cohort", "chunk")
         .agg(count(lit(1)).as("refs"))
         .withColumn("tok", expr(
-          "CAST(conv(substring(md5(concat('ct:', CAST(chunk AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200 + 50"))
+          s"${md5Bits("ct", "chunk", 6)} % 200 + 50"))
       perChunk.groupBy("cohort")
         .agg(sum("refs").as("n_retrievals"),
           count(lit(1)).as("n_distinct_chunks"),
@@ -939,7 +939,7 @@ object Round15Ops extends Family {
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("tok"))
         .withColumn("synth", expr(
-          "CAST(conv(substring(md5(concat('sy:', CAST(doc_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100") <
+          s"${md5Bits("sy", "doc_id", 6)} % 100") <
           when(col("source") === "src2", 80L).otherwise(30L))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -990,9 +990,9 @@ object Round15Ops extends Family {
         .withColumn("c2", substring(col("name0"), 2, 1))
         .withColumn("typo", col("k") % 7 === 3)
         .withColumn("fat", expr(
-          "CAST(conv(substring(md5(concat('kb:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100 < 85"))
+          s"${md5Bits("kb", "k", 6)} % 100 < 85"))
         .withColumn("pick", expr(
-          "CAST(conv(substring(md5(concat('ka:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 2"))
+          s"${md5Bits("ka", "k", 6)} % 2"))
       // observed char: an md5-picked adjacent key when fat-fingered,
       // the guaranteed-non-adjacent 'q' otherwise
       val firstAdj = adj.groupBy("orig")
@@ -1030,7 +1030,7 @@ object Round15Ops extends Family {
         .withColumn("ref", concat(lit("REF"), lpad((col("k") % 1000000).cast("string"), 6, "0")))
         .withColumn("corrupt", col("k") % 6 === 2)
         .withColumn("cls", expr(
-          "CAST(conv(substring(md5(concat('oc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 4"))
+          s"${md5Bits("oc", "k", 6)} % 4"))
         .withColumn("seen",
           when(!col("corrupt"), col("ref"))
             .when(col("cls") === 0, expr("translate(ref, '0', 'O')"))
@@ -1131,13 +1131,13 @@ object Round15Ops extends Family {
       val pts = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("dense", expr(
-          "CAST(conv(substring(md5(concat('db:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 7"))
+          s"${md5Bits("db", "k", 6)} % 10 < 7"))
         .withColumn("x",
           when(col("dense"),
-            lit(10000L) + expr("CAST(conv(substring(md5(concat('dc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3") * 40000L +
-              expr("CAST(conv(substring(md5(concat('dx:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 501"))
+            lit(10000L) + expr(s"${md5Bits("dc", "k", 6)} % 3") * 40000L +
+              expr(s"${md5Bits("dx", "k", 6)} % 501"))
             .otherwise(expr(
-              "CAST(conv(substring(md5(concat('du:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000")))
+              s"${md5Bits("du", "k", 6)} % 100000")))
         .withColumn("b", expr("x DIV 400"))
       val n = pts.count()
       val minPts = math.max(1L, n / 100)
@@ -1190,7 +1190,7 @@ object Round15Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("hi", (col("k") * 7919L + 13L) % 1000000000L)
         .withColumn("lo", expr(
-          "CAST(conv(substring(md5(concat('ib:', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 1000000000"))
+          s"${md5Bits("ib", "k", 8)} % 1000000000"))
         // check digits for account || 'DE00' tail: r over acct·10⁶+131400
         .withColumn("m2c", expr("((hi % 97) * 34 + lo) % 97"))
         .withColumn("check", lit(98L) - expr("(m2c * 27 + 131400) % 97"))
@@ -1359,7 +1359,7 @@ object Round15Ops extends Family {
         .withColumn("i", explode(expr("sequence(0, 47)")))
         .withColumn("cls", (col("m") % 7).cast("int"))
         .withColumn("noise", expr(
-          "CAST(conv(substring(md5(concat('cc:', CAST(m AS STRING), ':', CAST(i AS STRING))), 1, 6), 16, 10) AS BIGINT) % 41") - 20L)
+          s"${md5Bits("concat('cc:', CAST(m AS STRING), ':', CAST(i AS STRING))", 6)} % 41") - 20L)
         .withColumn("x",
           lit(500L) + col("noise") +
             when(col("cls") === 2 && col("i") >= 30, 80L).otherwise(0L) +
@@ -1526,7 +1526,7 @@ object Round15Ops extends Family {
           col("o_custkey").cast("bigint").as("acct"))
         .withColumn("cohort", (col("acct") % 5).cast("int"))
         .withColumn("g", expr(
-          "CAST(conv(substring(md5(concat('rn:', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT)"))
+          md5Bits("rn", "k", 8)))
         .withColumn("cents",
           when(col("cohort") === 3 && col("g") % 10 < 4,
             (col("g") % 150 + 1) * 10000L)
@@ -1556,9 +1556,9 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("acc", (col("k") % 8).cast("int"))
         .withColumn("lag", expr(
-          "CAST(CAST(conv(substring(md5(concat('cd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % (8 - k % 8) AS INT)"))
+          s"CAST(${md5Bits("cd", "k", 6)} % (8 - k % 8) AS INT)"))
         .withColumn("cents", expr(
-          "CAST(conv(substring(md5(concat('cp:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000 + 1000"))
+          s"${md5Bits("cp", "k", 6)} % 100000 + 1000"))
       val incr = pay.groupBy("acc", "lag").agg(sum("cents").as("inc"))
       val wCum = Window.partitionBy("acc").orderBy("lag")
       val cum = incr.withColumn("c", sum("inc").over(wCum))
@@ -1604,7 +1604,7 @@ object Round15Ops extends Family {
         .withColumn("n_claims", lit(0L))
       for (yr <- 1 to 6) {
         t = t.withColumn("claim", expr(
-          s"CAST(conv(substring(md5(concat('bm$yr:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100") <
+          s"${md5Bits(s"bm$yr", "k", 6)} % 100") <
           when(col("cohort") === 2, 40L).otherwise(20L))
           .withColumn("lvl",
             when(col("claim"), greatest(col("lvl") - 2, lit(0L)))
@@ -1634,7 +1634,7 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 8).cast("int"))
         .withColumn("cents", expr(
-          "CAST(conv(substring(md5(concat('cb:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 50000 + 1000") *
+          s"${md5Bits("cb", "k", 6)} % 50000 + 1000") *
           when(col("cls") === 4, 2L).otherwise(1L))
       val coll = t.agg(
         expr("(SUM(cents) * 1000) DIV COUNT(*)").as("coll_mean_milli"))
@@ -1662,7 +1662,7 @@ object Round15Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
         .withColumn("p0", expr(
-          "CAST(conv(substring(md5(concat('ln:', CAST(k AS STRING))), 1, 8), 16, 10) AS BIGINT) % 2000000 + 100000"))
+          s"${md5Bits("ln", "k", 8)} % 2000000 + 100000"))
         .withColumn("pay", expr(
           "(p0 * 10000 * 1126822) DIV 126822000000"))
         .withColumn("bal", col("p0"))
@@ -1723,7 +1723,7 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("key"))
         .withColumn("cls", (col("key") % 5).cast("int"))
         .withColumn("spot", expr(
-          "CAST(conv(substring(md5(concat('op:', CAST(key AS STRING))), 1, 6), 16, 10) AS BIGINT) % 5000 + 8000"))
+          s"${md5Bits("op", "key", 6)} % 5000 + 8000"))
         .withColumn("strike", expr("spot + (cls - 2) * 2000"))
         .withColumn("k", explode(expr("sequence(0, 12)")))
         .withColumn("coef", expr(
@@ -1753,7 +1753,7 @@ object Round15Ops extends Family {
         .select(col("doc_id"), col("text"))
         .withColumn("cls", (col("doc_id") % 5).cast("int"))
         .withColumn("g", expr(
-          "CAST(conv(substring(md5(concat('pii:', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT)"))
+          md5Bits("pii", "doc_id", 8)))
         .withColumn("planted",
           when(col("cls") === 1, concat(lit(" ssn "),
             lpad((col("g") % 900 + 100).cast("string"), 3, "0"), lit("-"),
@@ -1861,7 +1861,7 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("period", (col("k") % 12).cast("int"))
         .withColumn("cents", expr(
-          "CAST(conv(substring(md5(concat('tb:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 500000 + 100"))
+          s"${md5Bits("tb", "k", 6)} % 500000 + 100"))
         .withColumn("broken", col("k") % 997 === 13)
       val lines = ev.withColumn("side", explode(
           when(col("broken"), array(lit("debit")))
@@ -1891,10 +1891,10 @@ object Round15Ops extends Family {
           col("o_custkey").cast("bigint").as("cust"))
         .withColumn("cohort", (col("cust") % 4).cast("int"))
         .withColumn("age_days", expr(
-          "CAST(conv(substring(md5(concat('ar:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 120") +
+          s"${md5Bits("ar", "k", 6)} % 120") +
           when(col("cohort") === 1, 30L).otherwise(0L))
         .withColumn("cents", expr(
-          "CAST(conv(substring(md5(concat('ai:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 800000 + 5000"))
+          s"${md5Bits("ai", "k", 6)} % 800000 + 5000"))
         .withColumn("bucket",
           when(col("age_days") === 0, "0_current")
             .when(col("age_days") <= 30, "1_1to30")
@@ -1926,10 +1926,10 @@ object Round15Ops extends Family {
         .select(col("event_id"))
         .withColumn("bucket", (col("event_id") % 8).cast("int"))
         .withColumn("delay", expr(
-          "CAST(conv(substring(md5(concat('la:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 21") +
+          s"${md5Bits("la", "event_id", 6)} % 21") +
           when(col("event_id") % 13 === 7, 50L).otherwise(0L))
         .withColumn("cents", expr(
-          "CAST(conv(substring(md5(concat('lc:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10000"))
+          s"${md5Bits("lc", "event_id", 6)} % 10000"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_facts"),
           sum(when(col("delay") > 10, 1L).otherwise(0L)).as("n_late"),
@@ -1952,7 +1952,7 @@ object Round15Ops extends Family {
       var t = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("g"))
         .withColumn("a_milli", expr(
-          "CAST(conv(substring(md5(concat('el:', CAST(g AS STRING))), 1, 6), 16, 10) AS BIGINT) % 19000 + 1000"))
+          s"${md5Bits("el", "g", 6)} % 19000 + 1000"))
         .withColumn("b", lit(1000000L))
       for (n <- 1 to 12) {
         t = t.withColumn("b", expr(
@@ -1980,9 +1980,9 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
         .withColumn("demand", expr(
-          "CAST(conv(substring(md5(concat('fd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100 + 1"))
+          s"${md5Bits("fd", "k", 6)} % 100 + 1"))
         .withColumn("stock", expr(
-          "CAST(conv(substring(md5(concat('fs:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 120") +
+          s"${md5Bits("fs", "k", 6)} % 120") +
           when(col("cohort") === 2, 0L).otherwise(40L))
         .withColumn("fulfilled", least(col("demand"), col("stock")))
         .groupBy("cohort")
@@ -2008,10 +2008,10 @@ object Round15Ops extends Family {
         .select(col("p_partkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 3).cast("int"))
         .withColumn("views", expr(
-          "CAST(conv(substring(md5(concat('lv:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("lv", "k", 6)} % 100"))
         .withColumn("clicks",
           when(col("views") === 0, 0L).otherwise(expr(
-            "CAST(conv(substring(md5(concat('lk:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % (views + 1)")))
+            s"${md5Bits("lk", "k", 6)} % (views + 1)")))
         .withColumn("raw_ppm", expr("(clicks * 1000000) DIV NULLIF(views, 0)"))
         .withColumn("smoothed_ppm", expr("((clicks + 5) * 1000000) DIV (views + 50)"))
         .groupBy("cohort")
@@ -2046,7 +2046,7 @@ object Round15Ops extends Family {
             col("c_nationkey").cast("bigint").as("city0"))
           .withColumn("surname",
             when(col("k") % 3 < 2, concat(lit("S"), lpad(expr(
-              "CAST(conv(substring(md5(concat('tf:', CAST(k DIV 3 AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200")
+              s"${md5Bits("tf", "k DIV 3", 6)} % 200")
               .cast("string"), 3, "0")))
               .otherwise(concat(lit("R"), col("k").cast("string"))))
         if (drift) base.withColumn("city",
@@ -2138,9 +2138,9 @@ object Round15Ops extends Family {
       var t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 5).cast("int"))
-        .withColumn("r_milli", expr("700 + (k % 5) * 50 + CAST(conv(substring(md5(concat('rt:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 50"))
+        .withColumn("r_milli", expr(s"700 + (k % 5) * 50 + ${md5Bits("rt", "k", 4)} % 50"))
         .withColumn("margin", expr(
-          "CAST(conv(substring(md5(concat('mg:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 5000 + 500"))
+          s"${md5Bits("mg", "k", 6)} % 5000 + 500"))
         .withColumn("surv", lit(1000000L))
         .withColumn("clv_num", lit(0L))
       for (p <- 1 to 8) {
@@ -2168,7 +2168,7 @@ object Round15Ops extends Family {
       val req = Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 4).as("svc"))
         .withColumn("len", expr(
-          "CAST(conv(substring(md5(concat('bl:', CAST(event_id AS STRING))), 1, 6), 16, 10) AS BIGINT) % 491 + 10"))
+          s"${md5Bits("bl", "event_id", 6)} % 491 + 10"))
         .localCheckpoint() // both strategies fold over it
       val wArr = Window.partitionBy("svc").orderBy("event_id")
       val wLen = Window.partitionBy("svc").orderBy("len", "event_id")
@@ -2274,9 +2274,9 @@ object Round15Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
         .withColumn("issued", expr(
-          "CAST(conv(substring(md5(concat('gc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 20000 + 500"))
+          s"${md5Bits("gc", "k", 6)} % 20000 + 500"))
         .withColumn("redeem_pct", expr(
-          "CAST(conv(substring(md5(concat('gr:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 101") +
+          s"${md5Bits("gr", "k", 6)} % 101") +
           when(col("cohort") === 2, 40L).otherwise(0L))
         .withColumn("redeemed", expr("(issued * least(redeem_pct, 100)) DIV 100"))
         .withColumn("expired", col("k") % 5 === 3)
@@ -2304,10 +2304,10 @@ object Round15Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("snapshot", when(col("k") % 2 === 0, "a").otherwise("b"))
         .withColumn("email_null", expr(
-          "CAST(conv(substring(md5(concat('ne:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10") <
+          s"${md5Bits("ne", "k", 6)} % 10") <
           when(col("k") % 2 === 0, 1L).otherwise(4L))
         .withColumn("phone_null", expr(
-          "CAST(conv(substring(md5(concat('np:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 2"))
+          s"${md5Bits("np", "k", 6)} % 10 < 2"))
         .select(col("snapshot"), expr(
           "stack(2, 'email', email_null, 'phone', phone_null) AS (col_name, is_null)"))
       val rates = t.groupBy("col_name", "snapshot")
@@ -2336,7 +2336,7 @@ object Round15Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("cv"))
         .withColumn("turn", explode(expr("sequence(0, 11)")))
         .withColumn("tok", expr(
-          "CAST(conv(substring(md5(concat('tt:', CAST(cv AS STRING), ':', CAST(turn AS STRING))), 1, 6), 16, 10) AS BIGINT) % 290 + 10"))
+          s"${md5Bits("concat('tt:', CAST(cv AS STRING), ':', CAST(turn AS STRING))", 6)} % 290 + 10"))
       val wSuffix = Window.partitionBy("cv").orderBy(desc("turn"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       turns.withColumn("suffix_tok", sum("tok").over(wSuffix))
@@ -2490,7 +2490,7 @@ object Round15Ops extends Family {
        |        THEN $stride * ((node // $stride + 1) % (SELECT $cntCol FROM nn))
        |        ELSE v END AS node
        |    FROM (SELECT probe_id, node,
-       |            $stride * (('0x' || substring(md5('hl$layer:' || CAST(node AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)), 1, 8))::BIGINT
+       |            $stride * (${duckMd5Bits(s"'hl$layer:' || CAST(node AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)}
        |              % (SELECT $cntCol FROM nn)) AS v
        |          FROM $prev CROSS JOIN range(0, $deg) j) q1
        |    UNION ALL SELECT probe_id, node FROM $prev) q2),
@@ -2546,10 +2546,10 @@ object Round15Ops extends Family {
          |ORDER BY vs.probe_id""".stripMargin,
 
     "agg_gift_card_breakage" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(c_custkey % 4 AS INT) AS cohort,
-        |    ('0x' || substring(md5('gc:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 20000 + 500 AS issued,
-        |    LEAST(('0x' || substring(md5('gr:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 101
+        |    ${duckMd5Bits("gc", "c_custkey", 6)} % 20000 + 500 AS issued,
+        |    LEAST(${duckMd5Bits("gr", "c_custkey", 6)} % 101
         |      + CASE WHEN c_custkey % 4 = 2 THEN 40 ELSE 0 END, 100) AS redeem_pct,
         |    c_custkey % 5 = 3 AS expired
         |  FROM customer),
@@ -2564,11 +2564,11 @@ object Round15Ops extends Family {
         |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "warehouse_schema_drift" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CASE WHEN c_custkey % 2 = 0 THEN 'a' ELSE 'b' END AS snapshot,
-        |    ('0x' || substring(md5('ne:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 10
+        |    ${duckMd5Bits("ne", "c_custkey", 6)} % 10
         |      < CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 4 END AS email_null,
-        |    ('0x' || substring(md5('np:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 10 < 2 AS phone_null
+        |    ${duckMd5Bits("np", "c_custkey", 6)} % 10 < 2 AS phone_null
         |  FROM customer),
         |u AS (
         |  SELECT snapshot, 'email' AS col_name, email_null AS is_null FROM t
@@ -2586,9 +2586,9 @@ object Round15Ops extends Family {
         |ORDER BY a.col_name""".stripMargin,
 
     "llm_turn_truncation" ->
-      """WITH turns AS (
+      s"""WITH turns AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS cv, CAST(j.range AS INT) AS turn,
-        |    ('0x' || substring(md5('tt:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)), 1, 6))::BIGINT % 290 + 10 AS tok
+        |    ${duckMd5Bits("'tt:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 6)} % 290 + 10 AS tok
         |  FROM orders CROSS JOIN range(0, 12) j),
         |k AS (
         |  SELECT cv, turn, tok,
@@ -2604,9 +2604,9 @@ object Round15Ops extends Family {
         |FROM k GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "llm_batch_padding" ->
-      """WITH req AS (
+      s"""WITH req AS (
         |  SELECT event_id, user_id % 4 AS svc,
-        |    ('0x' || substring(md5('bl:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 491 + 10 AS len
+        |    ${duckMd5Bits("bl", "event_id", 6)} % 491 + 10 AS len
         |  FROM events),
         |a1 AS (SELECT svc, len,
         |    (ROW_NUMBER() OVER (PARTITION BY svc ORDER BY event_id) - 1) // 16 AS batch
@@ -2681,17 +2681,17 @@ object Round15Ops extends Family {
         |GROUP BY 1 ORDER BY x.probe_id""".stripMargin,
 
     "join_fs_tf_adjust" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS ak,
         |    CASE WHEN c_custkey % 3 < 2
-        |      THEN 'S' || lpad(CAST(('0x' || substring(md5('tf:' || CAST(c_custkey // 3 AS VARCHAR)), 1, 6))::BIGINT % 200 AS VARCHAR), 3, '0')
+        |      THEN 'S' || lpad(CAST(${duckMd5Bits("tf", "c_custkey // 3", 6)} % 200 AS VARCHAR), 3, '0')
         |      ELSE 'R' || CAST(c_custkey AS VARCHAR) END AS surname,
         |    CAST(c_nationkey AS BIGINT) AS acity
         |  FROM customer),
         |b AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS bk,
         |    CASE WHEN c_custkey % 3 < 2
-        |      THEN 'S' || lpad(CAST(('0x' || substring(md5('tf:' || CAST(c_custkey // 3 AS VARCHAR)), 1, 6))::BIGINT % 200 AS VARCHAR), 3, '0')
+        |      THEN 'S' || lpad(CAST(${duckMd5Bits("tf", "c_custkey // 3", 6)} % 200 AS VARCHAR), 3, '0')
         |      ELSE 'R' || CAST(c_custkey AS VARCHAR) END AS surname,
         |    CASE WHEN c_custkey % 15 = 2 THEN (CAST(c_nationkey AS BIGINT) + 1) % 25
         |      ELSE CAST(c_nationkey AS BIGINT) END AS bcity
@@ -2753,8 +2753,8 @@ object Round15Ops extends Family {
       s"""WITH c0 AS (
          |  SELECT CAST(c_custkey AS BIGINT) AS k, CAST(c_custkey % 5 AS INT) AS cohort,
          |    700 + (c_custkey % 5) * 50
-         |      + ('0x' || substring(md5('rt:' || CAST(c_custkey AS VARCHAR)), 1, 4))::BIGINT % 50 AS r_milli,
-         |    ('0x' || substring(md5('mg:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 5000 + 500 AS margin,
+         |      + ${duckMd5Bits("rt", "c_custkey", 4)} % 50 AS r_milli,
+         |    ${duckMd5Bits("mg", "c_custkey", 6)} % 5000 + 500 AS margin,
          |    CAST(1000000 AS BIGINT) AS surv, CAST(0 AS BIGINT) AS clv_num
          |  FROM customer),
          |$steps
@@ -2772,7 +2772,7 @@ object Round15Ops extends Family {
       }.mkString(",\n")
       s"""WITH e0 AS (
          |  SELECT CAST(s_suppkey AS BIGINT) AS g,
-         |    ('0x' || substring(md5('el:' || CAST(s_suppkey AS VARCHAR)), 1, 6))::BIGINT % 19000 + 1000 AS a_milli,
+         |    ${duckMd5Bits("el", "s_suppkey", 6)} % 19000 + 1000 AS a_milli,
          |    CAST(1000000 AS BIGINT) AS b
          |  FROM supplier),
          |$steps
@@ -2786,10 +2786,10 @@ object Round15Ops extends Family {
     },
 
     "agg_fill_rate" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey % 4 AS INT) AS cohort,
-        |    ('0x' || substring(md5('fd:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 + 1 AS demand,
-        |    ('0x' || substring(md5('fs:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 120
+        |    ${duckMd5Bits("fd", "o_orderkey", 6)} % 100 + 1 AS demand,
+        |    ${duckMd5Bits("fs", "o_orderkey", 6)} % 120
         |      + CASE WHEN o_orderkey % 4 = 2 THEN 0 ELSE 40 END AS stock
         |  FROM orders),
         |f AS (SELECT cohort, demand, LEAST(demand, stock) AS fulfilled FROM t)
@@ -2801,15 +2801,15 @@ object Round15Ops extends Family {
         |FROM f GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "agg_laplace_ctr" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(p_partkey % 3 AS INT) AS cohort,
-        |    ('0x' || substring(md5('lv:' || CAST(p_partkey AS VARCHAR)), 1, 6))::BIGINT % 100 AS views,
+        |    ${duckMd5Bits("lv", "p_partkey", 6)} % 100 AS views,
         |    p_partkey AS k
         |  FROM part),
         |c AS (
         |  SELECT cohort, views,
         |    CASE WHEN views = 0 THEN 0
-        |      ELSE ('0x' || substring(md5('lk:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % (views + 1) END AS clicks
+        |      ELSE ${duckMd5Bits("lk", "k", 6)} % (views + 1) END AS clicks
         |  FROM t),
         |r AS (
         |  SELECT cohort, views, clicks,
@@ -2824,9 +2824,9 @@ object Round15Ops extends Family {
         |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "warehouse_trial_balance" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_orderkey % 12 AS INT) AS period,
-        |    ('0x' || substring(md5('tb:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 500000 + 100 AS cents,
+        |    ${duckMd5Bits("tb", "o_orderkey", 6)} % 500000 + 100 AS cents,
         |    o_orderkey % 997 = 13 AS broken
         |  FROM orders),
         |ln AS (
@@ -2849,11 +2849,11 @@ object Round15Ops extends Family {
         |FROM bal JOIN bc ON bc.period = bal.period ORDER BY bal.period""".stripMargin,
 
     "warehouse_ar_aging" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_custkey % 4 AS INT) AS cohort,
-        |    ('0x' || substring(md5('ar:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 120
+        |    ${duckMd5Bits("ar", "o_orderkey", 6)} % 120
         |      + CASE WHEN o_custkey % 4 = 1 THEN 30 ELSE 0 END AS age_days,
-        |    ('0x' || substring(md5('ai:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 800000 + 5000 AS cents
+        |    ${duckMd5Bits("ai", "o_orderkey", 6)} % 800000 + 5000 AS cents
         |  FROM orders),
         |b AS (
         |  SELECT cohort, cents,
@@ -2872,11 +2872,11 @@ object Round15Ops extends Family {
         |FROM b GROUP BY 1, 2 ORDER BY cohort, bucket""".stripMargin,
 
     "warehouse_late_arriving_fact" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(event_id % 8 AS INT) AS bucket,
-        |    ('0x' || substring(md5('la:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 21
+        |    ${duckMd5Bits("la", "event_id", 6)} % 21
         |      + CASE WHEN event_id % 13 = 7 THEN 50 ELSE 0 END AS delay,
-        |    ('0x' || substring(md5('lc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 10000 AS cents
+        |    ${duckMd5Bits("lc", "event_id", 6)} % 10000 AS cents
         |  FROM events)
         |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_facts,
         |  CAST(SUM(CASE WHEN delay > 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
@@ -2886,9 +2886,9 @@ object Round15Ops extends Family {
         |FROM t GROUP BY 1 ORDER BY bucket""".stripMargin,
 
     "llm_pii_scan" ->
-      """WITH t AS (
+      raw"""WITH t AS (
         |  SELECT CAST(doc_id % 5 AS INT) AS cls, text,
-        |    ('0x' || substring(md5('pii:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS g
+        |    ${duckMd5Bits("pii", "doc_id", 8)} AS g
         |  FROM documents),
         |p AS (
         |  SELECT cls, text,
@@ -2960,10 +2960,10 @@ object Round15Ops extends Family {
       }.mkString(",\n")
       s"""WITH m0 AS (
          |  SELECT CAST(c_custkey AS BIGINT) AS k, CAST(c_custkey % 4 AS INT) AS cohort,
-         |    ('0x' || substring(md5('ln:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 2000000 + 100000 AS p0,
-         |    ((('0x' || substring(md5('ln:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 2000000 + 100000)
+         |    ${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000 AS p0,
+         |    ((${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000)
          |      * 10000 * 1126822) // 126822000000 AS pay,
-         |    ('0x' || substring(md5('ln:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 2000000 + 100000 AS bal,
+         |    ${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000 AS bal,
          |    CAST(0 AS BIGINT) AS interest_total
          |  FROM customer),
          |$months
@@ -2994,9 +2994,9 @@ object Round15Ops extends Family {
         |FROM c GROUP BY 1 ORDER BY coupon_pct""".stripMargin,
 
     "agg_binomial_option" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS key, CAST(o_orderkey % 5 AS INT) AS cls,
-        |    ('0x' || substring(md5('op:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 5000 + 8000 AS spot
+        |    ${duckMd5Bits("op", "o_orderkey", 6)} % 5000 + 8000 AS spot
         |  FROM orders),
         |x AS (
         |  SELECT key, cls, spot, spot + (cls - 2) * 2000 AS strike,
@@ -3013,10 +3013,10 @@ object Round15Ops extends Family {
         |FROM p GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "agg_chain_ladder" ->
-      """WITH pay AS (
+      s"""WITH pay AS (
         |  SELECT CAST(o_orderkey % 8 AS INT) AS acc,
-        |    CAST(('0x' || substring(md5('cd:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % (8 - o_orderkey % 8) AS INT) AS lag,
-        |    ('0x' || substring(md5('cp:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100000 + 1000 AS cents
+        |    CAST(${duckMd5Bits("cd", "o_orderkey", 6)} % (8 - o_orderkey % 8) AS INT) AS lag,
+        |    ${duckMd5Bits("cp", "o_orderkey", 6)} % 100000 + 1000 AS cents
         |  FROM orders),
         |incr AS (SELECT acc, lag, CAST(SUM(cents) AS BIGINT) AS inc FROM pay GROUP BY 1, 2),
         |cum AS (SELECT acc, lag,
@@ -3050,7 +3050,7 @@ object Round15Ops extends Family {
            |    CASE WHEN claim THEN GREATEST(lvl - 2, 0) ELSE LEAST(lvl + 1, 5) END AS lvl,
            |    n_claims + CASE WHEN claim THEN 1 ELSE 0 END AS n_claims
            |  FROM (SELECT y${yr - 1}.*,
-           |      ('0x' || substring(md5('bm$yr:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 100
+           |      ${duckMd5Bits(s"bm$yr", "k", 6)} % 100
            |        < CASE WHEN cohort = 2 THEN 40 ELSE 20 END AS claim
            |    FROM y${yr - 1}) q)""".stripMargin
       }.mkString(",\n")
@@ -3065,9 +3065,9 @@ object Round15Ops extends Family {
     },
 
     "agg_credibility_buhlmann" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey % 8 AS INT) AS cls,
-        |    (('0x' || substring(md5('cb:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 50000 + 1000)
+        |    (${duckMd5Bits("cb", "o_orderkey", 6)} % 50000 + 1000)
         |      * CASE WHEN o_orderkey % 8 = 4 THEN 2 ELSE 1 END AS cents
         |  FROM orders),
         |coll AS (SELECT CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS coll_mean_milli FROM t),
@@ -3120,9 +3120,9 @@ object Round15Ops extends Family {
         |FROM r GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "agg_round_number_bias" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_custkey % 5 AS INT) AS cohort,
-        |    ('0x' || substring(md5('rn:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS g
+        |    ${duckMd5Bits("rn", "o_orderkey", 8)} AS g
         |  FROM orders),
         |c AS (
         |  SELECT cohort,
@@ -3138,10 +3138,10 @@ object Round15Ops extends Family {
         |FROM c GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "win_control_chart" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT CAST(s_suppkey AS BIGINT) AS m, CAST(i.range AS INT) AS i,
         |    CAST(s_suppkey % 7 AS INT) AS cls,
-        |    500 + (('0x' || substring(md5('cc:' || CAST(s_suppkey AS VARCHAR) || ':' || CAST(i.range AS VARCHAR)), 1, 6))::BIGINT % 41) - 20
+        |    500 + (${duckMd5Bits("'cc:' || CAST(s_suppkey AS VARCHAR) || ':' || CAST(i.range AS VARCHAR)", 6)} % 41) - 20
         |      + CASE WHEN s_suppkey % 7 = 2 AND i.range >= 30 THEN 80 ELSE 0 END
         |      + CASE WHEN s_suppkey % 7 = 5 AND i.range >= 20 THEN 14 ELSE 0 END AS x
         |  FROM supplier CROSS JOIN range(0, 48) i),
@@ -3244,11 +3244,11 @@ object Round15Ops extends Family {
     },
 
     "agg_dbscan_grid" ->
-      """WITH pts AS (
-        |  SELECT CASE WHEN ('0x' || substring(md5('db:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 10 < 7
-        |    THEN 10000 + (('0x' || substring(md5('dc:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 3) * 40000
-        |       + ('0x' || substring(md5('dx:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 501
-        |    ELSE ('0x' || substring(md5('du:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100000
+      s"""WITH pts AS (
+        |  SELECT CASE WHEN ${duckMd5Bits("db", "o_orderkey", 6)} % 10 < 7
+        |    THEN 10000 + (${duckMd5Bits("dc", "o_orderkey", 6)} % 3) * 40000
+        |       + ${duckMd5Bits("dx", "o_orderkey", 6)} % 501
+        |    ELSE ${duckMd5Bits("du", "o_orderkey", 6)} % 100000
         |  END AS x
         |  FROM orders),
         |b0 AS (SELECT x // 400 AS b FROM pts),
@@ -3286,10 +3286,10 @@ object Round15Ops extends Family {
         |) ORDER BY cluster""".stripMargin,
 
     "fn_iban_mod97" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k,
         |    (CAST(c_custkey AS BIGINT) * 7919 + 13) % 1000000000 AS hi,
-        |    ('0x' || substring(md5('ib:' || CAST(c_custkey AS VARCHAR)), 1, 8))::BIGINT % 1000000000 AS lo
+        |    ${duckMd5Bits("ib", "c_custkey", 8)} % 1000000000 AS lo
         |  FROM customer),
         |c AS (
         |  SELECT k, hi, lo, k % 9 = 4 AS corrupted,
@@ -3308,7 +3308,7 @@ object Round15Ops extends Family {
         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "fn_keyboard_typo_model" ->
-      """WITH adj(orig, adjc) AS (VALUES
+      s"""WITH adj(orig, adjc) AS (VALUES
         |  ('M','N'), ('M','K'), ('C','X'), ('C','V'), ('O','I'), ('O','P'),
         |  ('E','W'), ('E','R'), ('A','S'), ('A','Q'), ('R','E'), ('R','T')),
         |fa AS (SELECT orig, MIN(adjc) AS a0, MAX(adjc) AS a1 FROM adj GROUP BY 1),
@@ -3320,8 +3320,8 @@ object Round15Ops extends Family {
         |o AS (
         |  SELECT k, substring(name0, 2, 1) AS c2, k % 7 = 3 AS typo,
         |    CASE WHEN k % 7 <> 3 THEN substring(name0, 2, 1)
-        |      WHEN ('0x' || substring(md5('kb:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 100 < 85
-        |        THEN CASE WHEN ('0x' || substring(md5('ka:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 2 = 0
+        |      WHEN ${duckMd5Bits("kb", "k", 6)} % 100 < 85
+        |        THEN CASE WHEN ${duckMd5Bits("ka", "k", 6)} % 2 = 0
         |          THEN fa.a0 ELSE fa.a1 END
         |      ELSE 'q' END AS oc
         |  FROM t JOIN fa ON fa.orig = substring(t.name0, 2, 1)),
@@ -3336,11 +3336,11 @@ object Round15Ops extends Family {
         |FROM c GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "fn_ocr_confusion" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    'REF' || lpad(CAST(o_orderkey % 1000000 AS VARCHAR), 6, '0') AS ref,
         |    o_orderkey % 6 = 2 AS corrupt,
-        |    ('0x' || substring(md5('oc:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 4 AS cls
+        |    ${duckMd5Bits("oc", "o_orderkey", 6)} % 4 AS cls
         |  FROM orders),
         |o AS (
         |  SELECT k, ref, corrupt, cls,
@@ -3376,13 +3376,13 @@ object Round15Ops extends Family {
         |FROM sc GROUP BY 1 ORDER BY lang""".stripMargin,
 
     "llm_reward_hacking_audit" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_orderkey % 4 AS INT) AS variant,
-        |    ('0x' || substring(md5('cl:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 400 + 100 AS len
+        |    ${duckMd5Bits("cl", "o_orderkey", 6)} % 400 + 100 AS len
         |  FROM orders),
         |r AS (SELECT variant, len,
         |    CASE WHEN variant = 2 THEN 200 + len * 2
-        |      ELSE ('0x' || substring(md5('rw:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 1000 END AS reward_milli
+        |      ELSE ${duckMd5Bits("rw", "k", 6)} % 1000 END AS reward_milli
         |  FROM t),
         |m AS (
         |  SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -3398,18 +3398,18 @@ object Round15Ops extends Family {
         |FROM m ORDER BY variant""".stripMargin,
 
     "llm_context_dedup" ->
-      """WITH ret AS (
+      s"""WITH ret AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS q,
         |    CASE WHEN j.range < 4
-        |      THEN ('0x' || substring(md5('rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)), 1, 8))::BIGINT % 50
-        |      ELSE 50 + ('0x' || substring(md5('rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)), 1, 8))::BIGINT % 100000
+        |      THEN ${duckMd5Bits("'rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)} % 50
+        |      ELSE 50 + ${duckMd5Bits("'rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)} % 100000
         |    END AS chunk
         |  FROM orders CROSS JOIN range(0, 12) j),
         |pc AS (
         |  SELECT CAST(q % 4 AS INT) AS cohort, chunk, CAST(COUNT(*) AS BIGINT) AS refs
         |  FROM ret GROUP BY 1, 2),
         |pt AS (SELECT cohort, refs,
-        |    ('0x' || substring(md5('ct:' || CAST(chunk AS VARCHAR)), 1, 6))::BIGINT % 200 + 50 AS tok
+        |    ${duckMd5Bits("ct", "chunk", 6)} % 200 + 50 AS tok
         |  FROM pc)
         |SELECT cohort, CAST(SUM(refs) AS BIGINT) AS n_retrievals,
         |  CAST(COUNT(*) AS BIGINT) AS n_distinct_chunks,
@@ -3418,9 +3418,9 @@ object Round15Ops extends Family {
         |FROM pt GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "llm_synthetic_mix_gate" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT source, CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-        |    ('0x' || substring(md5('sy:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100
+        |    ${duckMd5Bits("sy", "doc_id", 6)} % 100
         |      < CASE WHEN source = 'src2' THEN 80 ELSE 30 END AS synth
         |  FROM documents)
         |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3433,22 +3433,22 @@ object Round15Ops extends Family {
         |FROM t GROUP BY 1 ORDER BY source""".stripMargin,
 
     "service_read_repair" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT event_id, user_id % 8 AS shard,
-        |    ('0x' || substring(md5('vw:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 50 + 10 AS v_latest
+        |    ${duckMd5Bits("vw", "event_id", 6)} % 50 + 10 AS v_latest
         |  FROM events),
         |r AS (
         |  SELECT shard, event_id, v_latest,
-        |    CASE WHEN ('0x' || substring(md5('lag0:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 3 = 0
-        |      THEN v_latest - (('0x' || substring(md5('gap0:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 5 + 1)
+        |    CASE WHEN ${duckMd5Bits("lag0", "event_id", 6)} % 3 = 0
+        |      THEN v_latest - (${duckMd5Bits("gap0", "event_id", 6)} % 5 + 1)
         |      ELSE v_latest END AS r0,
-        |    CASE WHEN ('0x' || substring(md5('lag1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 4 = 0
-        |      THEN v_latest - (('0x' || substring(md5('gap1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 5 + 1)
+        |    CASE WHEN ${duckMd5Bits("lag1", "event_id", 6)} % 4 = 0
+        |      THEN v_latest - (${duckMd5Bits("gap1", "event_id", 6)} % 5 + 1)
         |      ELSE v_latest END AS r1,
-        |    CASE WHEN ('0x' || substring(md5('lag2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 5 = 0
-        |      THEN v_latest - (('0x' || substring(md5('gap2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 5 + 1)
+        |    CASE WHEN ${duckMd5Bits("lag2", "event_id", 6)} % 5 = 0
+        |      THEN v_latest - (${duckMd5Bits("gap2", "event_id", 6)} % 5 + 1)
         |      ELSE v_latest END AS r2,
-        |    ('0x' || substring(md5('pk:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 3 AS pick
+        |    ${duckMd5Bits("pk", "event_id", 6)} % 3 AS pick
         |  FROM t),
         |p AS (SELECT shard,
         |    CASE WHEN pick = 0 THEN r1 ELSE r0 END AS va,
@@ -3462,15 +3462,15 @@ object Round15Ops extends Family {
         |FROM p GROUP BY 1 ORDER BY shard""".stripMargin,
 
     "fn_merkle_antientropy" ->
-      """WITH ks AS (
+      s"""WITH ks AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    ('0x' || substring(md5('mk:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 64 AS leaf,
-        |    ('0x' || substring(md5('mv:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT AS va
+        |    ${duckMd5Bits("mk", "o_orderkey", 8)} % 64 AS leaf,
+        |    ${duckMd5Bits("mv", "o_orderkey", 6)} AS va
         |  FROM orders),
         |kv AS (SELECT k, leaf, va, CASE WHEN k % 16 = 9 THEN va + 1 ELSE va END AS vb FROM ks),
         |kh AS (SELECT leaf,
-        |    ('0x' || substring(md5('mh:' || CAST(k AS VARCHAR) || ':' || CAST(va AS VARCHAR)), 1, 12))::BIGINT % 1099511627776 AS ha,
-        |    ('0x' || substring(md5('mh:' || CAST(k AS VARCHAR) || ':' || CAST(vb AS VARCHAR)), 1, 12))::BIGINT % 1099511627776 AS hb
+        |    ${duckMd5Bits("'mh:' || CAST(k AS VARCHAR) || ':' || CAST(va AS VARCHAR)", 12)} % 1099511627776 AS ha,
+        |    ${duckMd5Bits("'mh:' || CAST(k AS VARCHAR) || ':' || CAST(vb AS VARCHAR)", 12)} % 1099511627776 AS hb
         |  FROM kv),
         |leaves AS (SELECT leaf, CAST(SUM(ha) % 1099511627776 AS BIGINT) AS da,
         |    CAST(SUM(hb) % 1099511627776 AS BIGINT) AS db,
@@ -3496,12 +3496,12 @@ object Round15Ops extends Family {
         |) ORDER BY level""".stripMargin,
 
     "agg_crdt_counter" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id % 7 AS key, CAST(event_id % 3 AS INT) AS node,
-        |    ('0x' || substring(md5('pn:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 4 <> 0 AS isp,
-        |    (event_id % 3 = 0) OR (('0x' || substring(md5('sv0:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 10 < 7) AS s0,
-        |    (event_id % 3 = 1) OR (('0x' || substring(md5('sv1:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 10 < 7) AS s1,
-        |    (event_id % 3 = 2) OR (('0x' || substring(md5('sv2:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 10 < 7) AS s2
+        |    ${duckMd5Bits("pn", "event_id", 6)} % 4 <> 0 AS isp,
+        |    (event_id % 3 = 0) OR (${duckMd5Bits("sv0", "event_id", 6)} % 10 < 7) AS s0,
+        |    (event_id % 3 = 1) OR (${duckMd5Bits("sv1", "event_id", 6)} % 10 < 7) AS s1,
+        |    (event_id % 3 = 2) OR (${duckMd5Bits("sv2", "event_id", 6)} % 10 < 7) AS s2
         |  FROM events),
         |pn AS (
         |  SELECT key, node,
@@ -3543,9 +3543,9 @@ object Round15Ops extends Family {
         |FROM est GROUP BY 1 ORDER BY cohort""".stripMargin,
 
     "service_retry_budget" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT user_id % 4 AS svc,
-        |    ('0x' || substring(md5('rf:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 100
+        |    ${duckMd5Bits("rf", "event_id", 6)} % 100
         |      < CASE WHEN user_id % 4 = 2 THEN 35 ELSE 15 END AS failed
         |  FROM events),
         |m AS (SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_requests,
@@ -3560,9 +3560,9 @@ object Round15Ops extends Family {
         |FROM m ORDER BY svc""".stripMargin,
 
     "agg_apdex" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT user_id % 4 AS svc,
-        |    ('0x' || substring(md5('ap:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 2000
+        |    ${duckMd5Bits("ap", "event_id", 6)} % 2000
         |      + CASE WHEN user_id % 4 = 3 THEN 800 ELSE 0 END AS lat_ms
         |  FROM events)
         |SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_requests,
@@ -3575,11 +3575,11 @@ object Round15Ops extends Family {
         |FROM t GROUP BY 1 ORDER BY svc""".stripMargin,
 
     "agg_interrupted_ts" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT event_id % 48 AS b, CAST(user_id % 3 AS INT) AS cohort,
         |    10000 + (event_id % 48) * 200
         |      + CASE WHEN event_id % 48 >= 24 THEN 5000 + (event_id % 48 - 24) * 300 ELSE 0 END
-        |      + ('0x' || substring(md5('n:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 200 AS cents
+        |      + ${duckMd5Bits("n", "event_id", 6)} % 200 AS cents
         |  FROM events),
         |bk AS (
         |  SELECT cohort, b, CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS y
@@ -3592,12 +3592,12 @@ object Round15Ops extends Family {
         |FROM seg GROUP BY 1, 2 ORDER BY cohort, segment""".stripMargin,
 
     "agg_synthetic_control" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT user_id % 8 AS unit, event_id % 24 AS b,
         |    10000 + (event_id % 24) * 100
-        |      + ('0x' || substring(md5('lv:' || CAST(user_id % 8 AS VARCHAR)), 1, 6))::BIGINT % 2000
+        |      + ${duckMd5Bits("lv", "user_id % 8", 6)} % 2000
         |      + CASE WHEN user_id % 8 = 0 AND event_id % 24 >= 12 THEN 4000 ELSE 0 END
-        |      + ('0x' || substring(md5('sc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 200 AS cents
+        |      + ${duckMd5Bits("sc", "event_id", 6)} % 200 AS cents
         |  FROM events),
         |bu AS (SELECT unit, b, CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS y
         |  FROM e GROUP BY 1, 2),
@@ -3617,10 +3617,10 @@ object Round15Ops extends Family {
         |FROM rk ORDER BY unit""".stripMargin,
 
     "agg_uplift_twomodel" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(c_custkey % 4 AS INT) AS segment,
-        |    ('0x' || substring(md5('tr:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 2 = 1 AS treated,
-        |    ('0x' || substring(md5('fl:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 10 = 0 AS flip
+        |    ${duckMd5Bits("tr", "c_custkey", 6)} % 2 = 1 AS treated,
+        |    ${duckMd5Bits("fl", "c_custkey", 6)} % 10 = 0 AS flip
         |  FROM customer),
         |r AS (
         |  SELECT segment, treated,
@@ -3640,20 +3640,20 @@ object Round15Ops extends Family {
         |FROM m ORDER BY segment""".stripMargin,
 
     "agg_count_min" ->
-      """WITH items AS (
+      s"""WITH items AS (
         |  SELECT CASE WHEN event_id % 3 < 2 THEN 'hh' || CAST(event_id % 5 AS VARCHAR)
         |    WHEN event_id % 997 = 5 THEN 'rare'
-        |    ELSE 'k' || CAST(('0x' || substring(md5('ck:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 5000 AS VARCHAR)
+        |    ELSE 'k' || CAST(${duckMd5Bits("ck", "event_id", 6)} % 5000 AS VARCHAR)
         |  END AS key
         |  FROM events),
         |sketch AS (
         |  SELECT i.range AS i,
-        |    ('0x' || substring(md5('cm' || CAST(i.range AS VARCHAR) || ':' || key), 1, 8))::BIGINT % 256 AS slot,
+        |    ${duckMd5Bits("'cm' || CAST(i.range AS VARCHAR) || ':' || key", 8)} % 256 AS slot,
         |    CAST(COUNT(*) AS BIGINT) AS cnt
         |  FROM items CROSS JOIN range(0, 4) i GROUP BY 1, 2),
         |probes AS (
         |  SELECT key, i.range AS i,
-        |    ('0x' || substring(md5('cm' || CAST(i.range AS VARCHAR) || ':' || key), 1, 8))::BIGINT % 256 AS slot
+        |    ${duckMd5Bits("'cm' || CAST(i.range AS VARCHAR) || ':' || key", 8)} % 256 AS slot
         |  FROM (SELECT unnest(['hh0','hh1','hh2','hh3','hh4','rare']) AS key) pk
         |  CROSS JOIN range(0, 4) i),
         |est AS (
@@ -3675,9 +3675,9 @@ object Round15Ops extends Family {
         |FROM sm GROUP BY 1 ORDER BY bucket""".stripMargin,
 
     "warehouse_t_closeness" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(c_custkey % 8 AS INT) AS qi,
-        |    ('0x' || substring(md5('sv:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT AS g
+        |    ${duckMd5Bits("sv", "c_custkey", 6)} AS g
         |  FROM customer),
         |x AS (SELECT qi, CASE WHEN qi = 3 AND g % 100 < 70 THEN 0 ELSE g % 5 END AS sv FROM t),
         |cls AS (SELECT qi, sv, CAST(COUNT(*) AS BIGINT) AS c_cs FROM x GROUP BY 1, 2),
@@ -3717,9 +3717,9 @@ object Round15Ops extends Family {
         |FROM r GROUP BY 1 ORDER BY canonical""".stripMargin,
 
     "join_mule_network" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_id, user_id,
-        |    ('0x' || substring(md5('amt:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 100000 AS cents
+        |    ${duckMd5Bits("amt", "event_id", 6)} % 100000 AS cents
         |  FROM events),
         |edges AS (
         |  SELECT 'u' || CAST(user_id AS VARCHAR) AS src,
@@ -3827,10 +3827,10 @@ object Round15Ops extends Family {
     },
 
     "llm_ann_filtered" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |st AS (SELECT COUNT(*) AS n_tot FROM e),
         |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
-        |         WHERE ('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT * 1.0
+        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
         |               < 4294967296.0 / sqrt(n_tot * 1.0)),
         |assigned AS (
         |  SELECT vec_id, emb, cluster, vec_id % 10 = 3 AS pred FROM (

@@ -51,7 +51,7 @@ object Round16Ops extends Family {
       val nDeleted = sizes.getLong(1)
       val mod = math.max(1L, math.sqrt(nTotal.toDouble).toLong)
       val cent = broadcast(vecs.where(expr(
-        s"CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % $mod = 0"))
+        s"${md5Bits("CAST(vec_id AS STRING)", 8)} % $mod = 0"))
         .select(col("vec_id").as("cid"), col("xs").as("cs")))
       // the index predates the erasure: EVERY vector assigned, then the
       // tombstone batch lands as a flag column — files are the lifecycle
@@ -148,10 +148,10 @@ object Round16Ops extends Family {
         .select(col("p_partkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 3).cast("int"))
         .withColumn("views", expr(
-          "CAST(conv(substring(md5(concat('wv:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("wv", "k", 6)} % 100"))
         .where(col("views") > 0)
         .withColumn("clicks", expr(
-          "CAST(conv(substring(md5(concat('wc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % (views + 1)"))
+          s"${md5Bits("wc", "k", 6)} % (views + 1)"))
         .withColumn("raw_ppm", expr("(clicks * 1000000) DIV views"))
         .withColumn("srt", expr(
           "isqrt((10000 * clicks * (views - clicks)) DIV views + 9604)"))
@@ -188,7 +188,7 @@ object Round16Ops extends Family {
         .withColumn("cohort", (col("k") % 3).cast("int"))
         .withColumn("theta", lit(5000L) + col("k") % 3 * 200L)
         .withColumn("x", col("theta") + expr(
-          "CAST(conv(substring(md5(concat('js:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 199") - 99L)
+          s"${md5Bits("js", "k", 6)} % 199") - 99L)
       val g = base.agg(count(lit(1)).as("kc"), sum("x").as("sx"))
         .withColumn("xbar_milli", expr("(sx * 1000) DIV kc"))
       val dev = base.crossJoin(broadcast(g))
@@ -318,13 +318,13 @@ object Round16Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
       val sup = base
         .withColumn("s", expr(
-          "CAST(conv(substring(md5(concat('mfs:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200") + 500L)
+          s"${md5Bits("mfs", "k", 6)} % 200") + 500L)
         .withColumn("se", sum("s").over(wK))
         .withColumn("ss", col("se") - col("s"))
         .localCheckpoint()
       val dem = base
         .withColumn("dc", expr(
-          "CAST(conv(substring(md5(concat('mfd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200") + 100L)
+          s"${md5Bits("mfd", "k", 6)} % 200") + 100L)
         .withColumn("de", sum("dc").over(wK))
         .withColumn("ds", col("de") - col("dc"))
         .localCheckpoint()
@@ -430,11 +430,11 @@ object Round16Ops extends Family {
       val pts = Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("k"))
         .withColumn("gc", expr(
-          "CAST(conv(substring(md5(concat('gc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 16"))
+          s"${md5Bits("gc", "k", 6)} % 16"))
         .withColumn("x", expr(
-          "(gc % 4) * 262144 + 131072 + CAST(conv(substring(md5(concat('gox:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 6001 - 3000"))
+          s"(gc % 4) * 262144 + 131072 + ${md5Bits("gox", "k", 6)} % 6001 - 3000"))
         .withColumn("y", expr(
-          "(gc DIV 4) * 262144 + 131072 + CAST(conv(substring(md5(concat('goy:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 6001 - 3000"))
+          s"(gc DIV 4) * 262144 + 131072 + ${md5Bits("goy", "k", 6)} % 6001 - 3000"))
         .withColumn("c4", expr("(x DIV 65536) * 16 + (y DIV 65536)"))
         .withColumn("c6", expr("(x DIV 16384) * 64 + (y DIV 16384)"))
         .withColumn("c8", expr("(x DIV 4096) * 256 + (y DIV 4096)"))
@@ -503,7 +503,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("p") % 5).cast("int"))
         .withColumn("i", explode(expr("sequence(0, 23)")))
         .withColumn("x", expr(
-          "CAST(conv(substring(md5(concat('sd:', CAST(p AS STRING), ':', CAST(i AS STRING))), 1, 6), 16, 10) AS BIGINT) % (20 * (cls + 1))") + 100L)
+          s"${md5Bits("concat('sd:', CAST(p AS STRING), ':', CAST(i AS STRING))", 6)} % (20 * (cls + 1))") + 100L)
         .groupBy("p", "cls")
         .agg(sum("x").as("sx"), sum(expr("x * x")).as("qx"))
         .withColumn("lt", col("p") % 3 + 1L)
@@ -658,7 +658,7 @@ object Round16Ops extends Family {
     // rollup.
     "fn_aba_routing" -> ((s, d) => {
       def dig(i: Int) =
-        s"CAST(conv(substring(md5(concat('aba:', CAST(k AS STRING))), $i, 1), 16, 10) AS BIGINT) % 10"
+        s"${md5Bits("concat('aba:', CAST(k AS STRING))", 1, i)} % 10"
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("wsum8", expr(
@@ -666,9 +666,9 @@ object Round16Ops extends Family {
         .withColumn("d9", expr("(10 - wsum8 % 10) % 10"))
         .withColumn("corrupt", col("k") % 9 === 4)
         .withColumn("cpos", expr(
-          "CAST(conv(substring(md5(concat('abp:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 9 + 1"))
+          s"${md5Bits("abp", "k", 4)} % 9 + 1"))
         .withColumn("cdelta", expr(
-          "CAST(conv(substring(md5(concat('abd:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 9 + 1"))
+          s"${md5Bits("abd", "k", 4)} % 9 + 1"))
         // corrupting digit p adds w(p)·δ to the weighted sum
         .withColumn("wpos", expr(
           "CASE WHEN cpos IN (1, 4, 7) THEN 3 WHEN cpos IN (2, 5, 8) THEN 7 ELSE 1 END"))
@@ -703,9 +703,9 @@ object Round16Ops extends Family {
         .withColumn("amp", (col("m") % 2 + 1L) * 100L)
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("x", expr(
-          """500 + cls * 8 * t
+          s"""500 + cls * 8 * t
             | + (CASE WHEN t % 4 = 0 THEN amp WHEN t % 4 = 2 THEN -amp ELSE 0 END)
-            | + CAST(conv(substring(md5(concat('hw:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 41 - 20""".stripMargin))
+            | + ${md5Bits("concat('hw:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 41 - 20""".stripMargin))
       val aggs = (0 to 23).map(t =>
         max(when(col("t") === t, col("x"))).as(s"x$t"))
       var wide = obs.groupBy("m", "cls", "amp")
@@ -737,9 +737,9 @@ object Round16Ops extends Family {
           array(lit(2160L), lit(1080L), lit(720L), lit(480L)),
           (col("k") % 4 + 1).cast("int")))
         .withColumn("dur_s", expr(
-          "CAST(conv(substring(md5(concat('vd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 540 + 60"))
+          s"${md5Bits("vd", "k", 6)} % 540 + 60"))
         .withColumn("cx", expr(
-          "CAST(conv(substring(md5(concat('vc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("vc", "k", 6)} % 100"))
       val rungs = t
         .withColumn("rung", explode(expr(
           """array(named_struct('h', CAST(2160 AS BIGINT), 'kbps', CAST(12000 AS BIGINT)),
@@ -778,10 +778,10 @@ object Round16Ops extends Family {
       val q = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("diff", expr(
-          "CAST(conv(substring(md5(concat('rd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("rd", "k", 6)} % 100"))
         .withColumn("conf", expr(
-          """GREATEST(CAST(0 AS BIGINT), LEAST(CAST(100 AS BIGINT), 100 - diff
-            | + CAST(conv(substring(md5(concat('rn:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 21 - 10))""".stripMargin))
+          s"""GREATEST(CAST(0 AS BIGINT), LEAST(CAST(100 AS BIGINT), 100 - diff
+            | + ${md5Bits("rn", "k", 6)} % 21 - 10))""".stripMargin))
         .withColumn("escalate", col("conf") < 60L)
         .withColumn("q_small", expr("92 - diff DIV 5"))
         .withColumn("q_big", expr("97 - diff DIV 10"))
@@ -856,8 +856,8 @@ object Round16Ops extends Family {
     // (shorter delay buys a smaller tail at strictly more load).
     "service_hedge_delay_sweep" -> ((s, d) => {
       def lat(salt: String) =
-        s"""CAST(conv(substring(md5(concat('$salt', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100 + 50
-           | + (CASE WHEN CAST(conv(substring(md5(concat('${salt}t', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 20 = 0
+        s"""${md5Bits(s"concat('$salt', CAST(k AS STRING))", 6)} % 100 + 50
+           | + (CASE WHEN ${md5Bits(s"concat('${salt}t', CAST(k AS STRING))", 6)} % 20 = 0
            |    THEN 900 ELSE 0 END)""".stripMargin
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
@@ -890,17 +890,17 @@ object Round16Ops extends Family {
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("genuine", col("k") % 4 === 0)
         .withColumn("face", expr(
-          """CASE WHEN k % 4 = 0
-            | THEN 600 + CAST(conv(substring(md5(concat('bf:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 400
-            | ELSE CAST(conv(substring(md5(concat('bf:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 700 END""".stripMargin))
+          s"""CASE WHEN k % 4 = 0
+            | THEN 600 + ${md5Bits("bf", "k", 6)} % 400
+            | ELSE ${md5Bits("bf", "k", 6)} % 700 END""".stripMargin))
         .withColumn("voice", expr(
-          """CASE WHEN k % 4 = 0
-            | THEN 550 + CAST(conv(substring(md5(concat('bv:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 450
-            | ELSE CAST(conv(substring(md5(concat('bv:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 750 END""".stripMargin))
+          s"""CASE WHEN k % 4 = 0
+            | THEN 550 + ${md5Bits("bv", "k", 6)} % 450
+            | ELSE ${md5Bits("bv", "k", 6)} % 750 END""".stripMargin))
         .withColumn("doc", expr(
-          """CASE WHEN k % 4 = 0
-            | THEN 500 + CAST(conv(substring(md5(concat('bd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 500
-            | ELSE CAST(conv(substring(md5(concat('bd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 600 END""".stripMargin))
+          s"""CASE WHEN k % 4 = 0
+            | THEN 500 + ${md5Bits("bd", "k", 6)} % 500
+            | ELSE ${md5Bits("bd", "k", 6)} % 600 END""".stripMargin))
         .withColumn("fused", expr("(3 * face + 2 * voice + doc) DIV 6"))
         .withColumn("tau", explode(expr("array(CAST(400 AS BIGINT), 500, 550, 600, 650)")))
       t.groupBy("tau")
@@ -932,11 +932,11 @@ object Round16Ops extends Family {
     "fn_isin_check" -> ((s, d) => {
       // expansion digits D1..D14: country (4), letter (2), 8 md5 digits
       def md(i: Int) =
-        s"CAST(conv(substring(md5(concat('is:', CAST(k AS STRING))), $i, 1), 16, 10) AS BIGINT) % 10"
+        s"${md5Bits("concat('is:', CAST(k AS STRING))", 1, i)} % 10"
       val cc = (1 to 4).map(j =>
         s"(CASE WHEN k % 3 = 0 THEN ${Seq(3, 0, 2, 8)(j - 1)} WHEN k % 3 = 1 THEN ${Seq(1, 6, 1, 1)(j - 1)} ELSE ${Seq(1, 3, 1, 4)(j - 1)} END)")
       val letter =
-        s"(10 + CAST(conv(substring(md5(concat('il:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 26)"
+        s"(10 + ${md5Bits("il", "k", 4)} % 26)"
       val ds: Seq[String] = cc ++ Seq(s"($letter DIV 10)", s"($letter % 10)") ++
         (1 to 8).map(i => s"(${md(i)})")
       def luhn2(e: String) = s"(CASE WHEN 2 * $e > 9 THEN 2 * $e - 9 ELSE 2 * $e END)"
@@ -949,9 +949,9 @@ object Round16Ops extends Family {
         .withColumn("check", expr("(10 - s14 % 10) % 10"))
         .withColumn("corrupt", col("k") % 8 === 5)
         .withColumn("cpos", expr(
-          "CAST(conv(substring(md5(concat('ip:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 14 + 1"))
+          s"${md5Bits("ip", "k", 4)} % 14 + 1"))
         .withColumn("cdelta", expr(
-          "CAST(conv(substring(md5(concat('ic:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 9 + 1"))
+          s"${md5Bits("ic", "k", 4)} % 9 + 1"))
         // corrupting D_cpos changes its transformed contribution; the
         // validity recheck recomputes the transformed digit both ways
         .withColumn("dorig", expr(
@@ -990,9 +990,9 @@ object Round16Ops extends Family {
         .withColumn("wash_plant", col("k") % 11 === 6)
         .withColumn("counter", when(col("wash_plant"),
           col("acct") - col("acct") % 5 + expr(
-            "CAST(conv(substring(md5(concat('wc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 5"))
+            s"${md5Bits("wc", "k", 6)} % 5"))
           .otherwise(expr(
-            "CAST(conv(substring(md5(concat('wo:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 500")))
+            s"${md5Bits("wo", "k", 6)} % 500")))
         .withColumn("itf", col("k") % 7 === 3)
       // registry keyed off the order stream so all 500 accounts exist at
       // every sf (customer at sf0.001 only reaches 150)
@@ -1029,7 +1029,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("k") % 3).cast("int"))
         .withColumn("i", explode(expr("sequence(0, 15)")))
         .withColumn("fail", expr(
-          "CAST(conv(substring(md5(concat('tc:', CAST(k AS STRING), ':', CAST(i AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 >= 7 - 2 * cls"))
+          s"${md5Bits("concat('tc:', CAST(k AS STRING), ':', CAST(i AS STRING))", 6)} % 10 >= 7 - 2 * cls"))
       val wOrd = Window.partitionBy("k").orderBy("i")
       val runs = steps
         .withColumn("failseq",
@@ -1075,11 +1075,11 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("k") % 3).cast("int"))
         .withColumn("e", explode(expr("sequence(0, 7)")))
         .withColumn("conf", expr(
-          """CASE WHEN k % 3 = 0
-            | THEN 800 + CAST(conv(substring(md5(concat('dc:', CAST(k AS STRING), ':', CAST(e AS STRING))), 1, 6), 16, 10) AS BIGINT) % 150
+          s"""CASE WHEN k % 3 = 0
+            | THEN 800 + ${md5Bits("concat('dc:', CAST(k AS STRING), ':', CAST(e AS STRING))", 6)} % 150
             | WHEN k % 3 = 2
-            | THEN 100 + CAST(conv(substring(md5(concat('dc:', CAST(k AS STRING), ':', CAST(e AS STRING))), 1, 6), 16, 10) AS BIGINT) % 150
-            | ELSE 200 + CAST(conv(substring(md5(concat('dc:', CAST(k AS STRING), ':', CAST(e AS STRING))), 1, 6), 16, 10) AS BIGINT) % 600
+            | THEN 100 + ${md5Bits("concat('dc:', CAST(k AS STRING), ':', CAST(e AS STRING))", 6)} % 150
+            | ELSE 200 + ${md5Bits("concat('dc:', CAST(k AS STRING), ':', CAST(e AS STRING))", 6)} % 600
             | END""".stripMargin))
         .groupBy("k", "cls")
         .agg(sum("conf").as("sc"), sum(expr("conf * conf")).as("qc"))
@@ -1111,7 +1111,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("m") % 3).cast("int"))
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("a", expr(
-          "55 + 25 * cls + CAST(conv(substring(md5(concat('bp:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 51"))
+          s"55 + 25 * cls + ${md5Bits("concat('bp:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 51"))
       val aggs = (0 to 23).map(t =>
         max(when(col("t") === t, col("a"))).as(s"a$t"))
       var wide = obs.groupBy("m", "cls").agg(aggs.head, aggs.tail: _*)
@@ -1182,14 +1182,14 @@ object Round16Ops extends Family {
     "fn_bech32_check" -> ((s, d) => {
       val hrpState = bech32Fold(1L, Seq(3L, 3L, 0L, 2L, 3L))
       def grp(j: Int) =
-        s"CAST(conv(substring(md5(concat('bw:', CAST(k AS STRING))), ${2 * j + 1}, 2), 16, 10) AS BIGINT) % 32"
+        s"${md5Bits("concat('bw:', CAST(k AS STRING))", 2, 2 * j + 1)} % 32"
       var t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("corrupt", col("k") % 5 === 2)
         .withColumn("cpos", expr(
-          "CAST(conv(substring(md5(concat('bp:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 12"))
+          s"${md5Bits("bp", "k", 4)} % 12"))
         .withColumn("cdelta", expr(
-          "CAST(conv(substring(md5(concat('bd:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 31 + 1"))
+          s"${md5Bits("bd", "k", 4)} % 31 + 1"))
       (0 until 12).foreach { j =>
         t = t.withColumn(s"g$j", expr(grp(j)))
           .withColumn(s"xg$j", expr(
@@ -1231,7 +1231,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("m") % 3).cast("int"))
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("n", expr(
-          """CAST(conv(substring(md5(concat('hk:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3
+          s"""${md5Bits("concat('hk:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 3
             | + (CASE WHEN m % 3 = 2 AND t BETWEEN 8 AND 10 THEN 4 ELSE 0 END)""".stripMargin))
       val aggs = (0 to 23).map(t =>
         max(when(col("t") === t, col("n"))).as(s"n$t"))
@@ -1262,9 +1262,9 @@ object Round16Ops extends Family {
       val units = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("score", expr(
-          "300000 + (k % 7) * 50000 + CAST(conv(substring(md5(concat('ps:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100000"))
+          s"300000 + (k % 7) * 50000 + ${md5Bits("ps", "k", 6)} % 100000"))
         .withColumn("treated", expr(
-          "CAST(conv(substring(md5(concat('pt:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000 < 100 + score DIV 2000"))
+          s"${md5Bits("pt", "k", 6)} % 1000 < 100 + score DIV 2000"))
         .withColumn("bucket", expr("score DIV 20000"))
         .localCheckpoint()
       val wB = Window.partitionBy("bucket", "treated").orderBy("score", "k")
@@ -1307,7 +1307,7 @@ object Round16Ops extends Family {
               .otherwise(round(col("o_totalprice") * 100).cast("bigint")).as("cents"))
       val bA = batch("a", 1, lit(false))
       val bB = batch("b", 2, expr(
-        "CAST(conv(substring(md5(concat('wb:', CAST(o_orderkey AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100 < 12"))
+        s"${md5Bits("wb", "o_orderkey", 6)} % 100 < 12"))
       val liveDir = Scratch.opDir("wap_live", d)
       base.write.mode("overwrite").parquet(liveDir)
       def audit(tag: String, b: DataFrame): (DataFrame, Boolean) = {
@@ -1372,7 +1372,7 @@ object Round16Ops extends Family {
     // substitution is caught: invalid census == planted census.
     "fn_nhs_number" -> ((s, d) => {
       def dig(i: Int) =
-        s"CAST(conv(substring(md5(concat('nh:', CAST(k AS STRING))), $i, 1), 16, 10) AS BIGINT) % 10"
+        s"${md5Bits("concat('nh:', CAST(k AS STRING))", 1, i)} % 10"
       val wsum = (1 to 9).map(i => s"(${dig(i)}) * ${11 - i}").mkString(" + ")
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
@@ -1381,9 +1381,9 @@ object Round16Ops extends Family {
         .withColumn("check", expr("(11 - r) % 11"))
         .withColumn("corrupt", !col("unissuable") && col("k") % 7 === 2)
         .withColumn("cpos", expr(
-          "CAST(conv(substring(md5(concat('np:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 9 + 1"))
+          s"${md5Bits("np", "k", 4)} % 9 + 1"))
         .withColumn("cdelta", expr(
-          "CAST(conv(substring(md5(concat('nd:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 9 + 1"))
+          s"${md5Bits("nd", "k", 4)} % 9 + 1"))
         .withColumn("wdelta", expr(
           (1 to 9).map(i => s"WHEN cpos = $i THEN ${11 - i} * cdelta")
             .mkString("CASE ", " ", " END")))
@@ -1415,11 +1415,11 @@ object Round16Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("batch", expr("k DIV 256"))
         .withColumn("g", expr(
-          "CAST(conv(substring(md5(concat('me:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10"))
+          s"${md5Bits("me", "k", 6)} % 10"))
         .withColumn("e1", expr(
-          "CASE WHEN g < 3 THEN CAST(0 AS BIGINT) ELSE CAST(conv(substring(md5(concat('m1:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 8 END"))
+          s"CASE WHEN g < 3 THEN CAST(0 AS BIGINT) ELSE ${md5Bits("m1", "k", 6)} % 8 END"))
         .withColumn("e2x", expr(
-          "CAST(conv(substring(md5(concat('m2:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 8"))
+          s"${md5Bits("m2", "k", 6)} % 8"))
         .withColumn("e2", expr("CASE WHEN e2x = e1 THEN (e2x + 1) % 8 ELSE e2x END"))
         .localCheckpoint()
       val batchSizes = toks.groupBy("batch").agg(count(lit(1)).as("bn"))
@@ -1461,7 +1461,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("m") % 3).cast("int"))
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("inc", expr(
-          "(1 + m % 3) * (CAST(conv(substring(md5(concat('cr:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3000000)"))
+          s"(1 + m % 3) * (${md5Bits("concat('cr:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 3000000)"))
         .withColumn("cum",
           sum("inc").over(wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .withColumn("reading", expr("cum % 16777216"))
@@ -1579,10 +1579,10 @@ object Round16Ops extends Family {
         .withColumn("base", expr("((t DIV 90) * 10) % 1000"))
         .withColumn("src", when(col("planted"), col("base") + col("hop"))
           .otherwise(expr(
-            "CAST(conv(substring(md5(concat('ts:', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000")))
+            s"${md5Bits("ts", "t", 6)} % 1000")))
         .withColumn("dst", when(col("planted"), col("base") + col("hop") + 1)
           .otherwise(expr(
-            "CAST(conv(substring(md5(concat('td:', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 1000")))
+            s"${md5Bits("td", "t", 6)} % 1000")))
         .where(col("src") =!= col("dst"))
         .select("src", "dst", "t")
         .localCheckpoint()
@@ -1630,7 +1630,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("p") % 3).cast("int"))
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("demand", expr(
-          "CAST(conv(substring(md5(concat('dm:', CAST(p AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 40") + col("cls") * 10L)
+          s"${md5Bits("concat('dm:', CAST(p AS STRING), ':', CAST(t AS STRING))", 6)} % 40") + col("cls") * 10L)
         .withColumn("sales", least(col("demand"), lit(35L)))
         .groupBy("cls")
         .agg(count(lit(1)).as("n_days"),
@@ -1655,9 +1655,9 @@ object Round16Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("req", col("k") % 200L)
         .withColumn("appr", expr(
-          """CASE WHEN k % 41 = 3 THEN k % 200
+          s"""CASE WHEN k % 41 = 3 THEN k % 200
             | WHEN k % 43 = 5 THEN (k % 200) - (k % 200) % 10 + ((k % 200) + 1) % 10
-            | ELSE CAST(conv(substring(md5(concat('ap:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200
+            | ELSE ${md5Bits("ap", "k", 6)} % 200
             | END""".stripMargin))
         .withColumn("r1", col("req") === col("appr"))
         .withColumn("r2", expr("req DIV 10 = appr DIV 10") && col("req") =!= col("appr"))
@@ -1712,7 +1712,7 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("pool") % 2).cast("int"))
         // even pools stay under the 1000 capacity, odd pools overload
         .withColumn("dem", expr(
-          "CAST(conv(substring(md5(concat('mf:', CAST(tn AS STRING))), 1, 6), 16, 10) AS BIGINT) % (120 + (pool % 2) * 400) + 20"))
+          s"${md5Bits("mf", "tn", 6)} % (120 + (pool % 2) * 400) + 20"))
       val wP = Window.partitionBy("pool").orderBy("dem", "tn")
       val ranked = ten
         .withColumn("rn", row_number().over(wP))
@@ -1754,7 +1754,7 @@ object Round16Ops extends Family {
     // the spec asserts the high-fail class ages worse at every bucket.
     "agg_settlement_fails" -> ((s, d) => {
       def fail(j: Int) =
-        s"(CAST(conv(substring(md5(concat('sf$j:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 3 + 3 * (k % 2))"
+        s"(${md5Bits(s"sf$j", "k", 6)} % 10 < 3 + 3 * (k % 2))"
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cp_cls", (col("k") % 2).cast("int"))
@@ -1784,14 +1784,14 @@ object Round16Ops extends Family {
     // Both planted censuses are caught exactly. Projection + rollup.
     "fn_bic_validate" -> ((s, d) => {
       def ch(i: Int) =
-        s"chr(65 + CAST(conv(substring(md5(concat('bc:', CAST(k AS STRING))), $i, 2), 16, 10) AS BIGINT) % 26)"
+        s"chr(65 + ${md5Bits("concat('bc:', CAST(k AS STRING))", 2, i)} % 26)"
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("country", expr(
           "element_at(array('US', 'GB', 'DE', 'FR', 'XX'), CAST(k % 5 AS INT) + 1)"))
         .withColumn("bank", expr(s"concat(${ch(1)}, ${ch(3)}, ${ch(5)}, ${ch(7)})"))
         .withColumn("loc", expr(
-          "lpad(CAST(CAST(conv(substring(md5(concat('bl:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 100 AS STRING), 2, '0')"))
+          s"lpad(CAST(${md5Bits("bl", "k", 4)} % 100 AS STRING), 2, '0')"))
         .withColumn("bic0", concat(col("bank"), col("country"), col("loc")))
         .withColumn("bic", when(col("k") % 9 === 4,
           concat(lower(substring(col("bic0"), 1, 1)), substring(col("bic0"), 2, 7)))
@@ -1821,11 +1821,11 @@ object Round16Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 3).cast("int"))
         .withColumn("ra", expr(
-          "CAST(conv(substring(md5(concat('ma:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 20 + 1"))
+          s"${md5Bits("ma", "k", 6)} % 20 + 1"))
         .withColumn("rb", expr(
-          """CASE WHEN CAST(conv(substring(md5(concat('mb:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 7
-            | THEN CAST(conv(substring(md5(concat('mc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 8 + 1
-            | ELSE CAST(conv(substring(md5(concat('mc:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 20 + 1
+          s"""CASE WHEN ${md5Bits("mb", "k", 6)} % 10 < 7
+            | THEN ${md5Bits("mc", "k", 6)} % 8 + 1
+            | ELSE ${md5Bits("mc", "k", 6)} % 20 + 1
             | END""".stripMargin))
       t.groupBy("cls")
         .agg(count(lit(1)).as("n_queries"),
@@ -1846,8 +1846,8 @@ object Round16Ops extends Family {
     // budget) times out the most.
     "service_deadline_budgets" -> ((s, d) => {
       def lat(salt: String, base: Int, w: Int) =
-        s"""(CAST(conv(substring(md5(concat('$salt', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % $w + $base
-           | + (CASE WHEN CAST(conv(substring(md5(concat('${salt}t', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 20 = 0
+        s"""(${md5Bits(s"concat('$salt', CAST(k AS STRING))", 6)} % $w + $base
+           | + (CASE WHEN ${md5Bits(s"concat('${salt}t', CAST(k AS STRING))", 6)} % 20 = 0
            |    THEN 400 ELSE 0 END))""".stripMargin
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
@@ -1922,13 +1922,13 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("m") % 2).cast("int"))
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("bid", expr(
-          "CAST(conv(substring(md5(concat('ob:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 900 + 100"))
+          s"${md5Bits("concat('ob:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 900 + 100"))
         .withColumn("ask", expr(
-          "CAST(conv(substring(md5(concat('oa:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 900 + 100"))
+          s"${md5Bits("concat('oa:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 900 + 100"))
         .withColumn("imb_sign", expr(
           "CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END"))
         .withColumn("agree", expr(
-          "CAST(conv(substring(md5(concat('om:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 7"))
+          s"${md5Bits("concat('om:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 10 < 7"))
         .withColumn("next_move", expr(
           "CASE WHEN agree THEN imb_sign ELSE -imb_sign END"))
       val scored = t
@@ -1958,14 +1958,14 @@ object Round16Ops extends Family {
       val emp = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("di", expr(
-          "CAST(conv(substring(md5(concat('gd:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3000 + 1000"))
+          s"${md5Bits("gd", "k", 6)} % 3000 + 1000"))
         .withColumn("ceiling", expr("(di * 25) DIV 100"))
       val orders = emp
         .withColumn("pri", explode(expr("sequence(1, 3)")))
         .where(expr(
-          "CAST(conv(substring(md5(concat('go:', CAST(k AS STRING), ':', CAST(pri AS STRING))), 1, 6), 16, 10) AS BIGINT) % 10 < 6"))
+          s"${md5Bits("concat('go:', CAST(k AS STRING), ':', CAST(pri AS STRING))", 6)} % 10 < 6"))
         .withColumn("amount", expr(
-          "CAST(conv(substring(md5(concat('ga:', CAST(k AS STRING), ':', CAST(pri AS STRING))), 1, 6), 16, 10) AS BIGINT) % 400 + 50"))
+          s"${md5Bits("concat('ga:', CAST(k AS STRING), ':', CAST(pri AS STRING))", 6)} % 400 + 50"))
       val wP = Window.partitionBy("k").orderBy("pri")
       val alloc = orders
         .withColumn("cum_before", coalesce(sum("amount").over(
@@ -1998,17 +1998,17 @@ object Round16Ops extends Family {
         .withColumn("cls", (col("m") % 2).cast("int"))
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("p", expr(
-          "10000 + CAST(conv(substring(md5(concat('vp:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 200 - 100"))
+          s"10000 + ${md5Bits("concat('vp:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 200 - 100"))
         .withColumn("v", expr(
-          "CAST(conv(substring(md5(concat('vv:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 900 + 100"))
+          s"${md5Bits("concat('vv:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 900 + 100"))
         .withColumn("prank", row_number().over(wR))
         .withColumn("pick", expr(
-          "CAST(conv(substring(md5(concat('vx:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 3 = 0"))
+          s"${md5Bits("concat('vx:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 3 = 0"))
         .withColumn("execd",
           when(col("cls") === 1, col("pick") && col("prank") <= 12)
             .otherwise(col("pick")))
         .withColumn("ev", when(col("execd"), expr(
-          "CAST(conv(substring(md5(concat('ve:', CAST(m AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 90 + 10"))
+          s"${md5Bits("concat('ve:', CAST(m AS STRING), ':', CAST(t AS STRING))", 6)} % 90 + 10"))
           .otherwise(lit(0L)))
       val per = ticks.groupBy("m", "cls")
         .agg(sum(expr("p * v")).as("pv_mkt"), sum("v").as("v_mkt"),
@@ -2034,14 +2034,14 @@ object Round16Ops extends Family {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("area0", expr(
-          "1 + CAST(conv(substring(md5(concat('sa:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 898"))
+          s"1 + ${md5Bits("sa", "k", 6)} % 898"))
         .withColumn("grp0", expr(
-          "1 + CAST(conv(substring(md5(concat('sg:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 99"))
+          s"1 + ${md5Bits("sg", "k", 6)} % 99"))
         .withColumn("ser0", expr(
-          "1 + CAST(conv(substring(md5(concat('sn:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 9999"))
+          s"1 + ${md5Bits("sn", "k", 6)} % 9999"))
         .withColumn("area", expr(
-          """CASE WHEN k % 23 = 4 THEN 666
-            | WHEN k % 23 = 5 THEN 900 + CAST(conv(substring(md5(concat('s9:', CAST(k AS STRING))), 1, 4), 16, 10) AS BIGINT) % 100
+          s"""CASE WHEN k % 23 = 4 THEN 666
+            | WHEN k % 23 = 5 THEN 900 + ${md5Bits("s9", "k", 4)} % 100
             | ELSE area0 END""".stripMargin))
         .withColumn("grp", expr("CASE WHEN k % 23 = 6 THEN 0 ELSE grp0 END"))
         .withColumn("ser", expr("CASE WHEN k % 23 = 7 THEN 0 ELSE ser0 END"))
@@ -2074,7 +2074,7 @@ object Round16Ops extends Family {
       var wide = t
       (0 to 23).foreach { h =>
         wide = wide.withColumn(s"dm$h", expr(
-          s"CAST(conv(substring(md5(concat('bp$h:', CAST(p AS STRING))), 1, 6), 16, 10) AS BIGINT) % 9000 + 1000"))
+          s"${md5Bits(s"bp$h", "p", 6)} % 9000 + 1000"))
       }
       pacingCols("DIV").foreach { case (n, e) => wide = wide.withColumn(n, expr(e)) }
       wide.groupBy("cls")
@@ -2101,11 +2101,11 @@ object Round16Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("jcls", (col("k") % 2).cast("int"))
         .withColumn("a_better", expr(
-          "CAST(conv(substring(md5(concat('jb:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 2 = 0"))
+          s"${md5Bits("jb", "k", 6)} % 2 = 0"))
         .withColumn("d1", expr(
-          "CAST(conv(substring(md5(concat('j1:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("j1", "k", 6)} % 100"))
         .withColumn("d2", expr(
-          "CAST(conv(substring(md5(concat('j2:', CAST(k AS STRING))), 1, 6), 16, 10) AS BIGINT) % 100"))
+          s"${md5Bits("j2", "k", 6)} % 100"))
         // order 1 presents A first; order 2 presents B first. The judge
         // picks the first slot iff draw < p(first wins): 75/25 by truth,
         // +15 first-slot lean for the biased class.
@@ -2151,7 +2151,7 @@ object Round16Ops extends Family {
         .withColumn("t", explode(expr("sequence(0, 23)")))
         .withColumn("off", expr(
           "(CASE WHEN cls = 1 THEN 2 * t WHEN cls = 2 THEN 5 * t ELSE 0 END)"
-            + " + CAST(conv(substring(md5(concat('sd:', CAST(v AS STRING), ':', CAST(t AS STRING))), 1, 6), 16, 10) AS BIGINT) % 9 - 4"))
+            + s" + ${md5Bits("concat('sd:', CAST(v AS STRING), ':', CAST(t AS STRING))", 6)} % 9 - 4"))
       val per = cues.groupBy("v", "cls")
         .agg(count(lit(1)).as("n"), sum("off").as("sx"),
           sum(expr("t * off")).as("stx"))
@@ -2468,7 +2468,7 @@ object Round16Ops extends Family {
 
     "fn_aba_routing" -> {
       def dig(i: Int) =
-        s"('0x' || substring(md5('aba:' || CAST(k AS VARCHAR)), $i, 1))::BIGINT % 10"
+        s"${duckMd5Bits("'aba:' || CAST(k AS VARCHAR)", 1, i)} % 10"
       s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
          |w AS (
          |  SELECT k,
@@ -2476,8 +2476,8 @@ object Round16Ops extends Family {
          |      + 7 * (${dig(2)} + ${dig(5)} + ${dig(8)})
          |      + (${dig(3)} + ${dig(6)}) AS wsum8,
          |    k % 9 = 4 AS corrupt,
-         |    ('0x' || substring(md5('abp:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 9 + 1 AS cpos,
-         |    ('0x' || substring(md5('abd:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 9 + 1 AS cdelta
+         |    ${duckMd5Bits("abp", "k", 4)} % 9 + 1 AS cpos,
+         |    ${duckMd5Bits("abd", "k", 4)} % 9 + 1 AS cdelta
          |  FROM t),
          |v AS (
          |  SELECT k, corrupt,
@@ -2514,7 +2514,7 @@ object Round16Ops extends Family {
          |  SELECT m, cls, amp, t,
          |    500 + cls * 8 * t
          |      + (CASE WHEN t % 4 = 0 THEN amp WHEN t % 4 = 2 THEN -amp ELSE 0 END)
-         |      + ('0x' || substring(md5('hw:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 41 - 20 AS x
+         |      + ${duckMd5Bits("'hw:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 41 - 20 AS x
          |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
          |      CAST(s_suppkey % 3 AS INT) AS cls,
          |      (s_suppkey % 2 + 1) * 100 AS amp FROM supplier) q,
@@ -2536,12 +2536,12 @@ object Round16Ops extends Family {
     },
 
     "mm_bitrate_ladder" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    CASE o_orderkey % 4 WHEN 0 THEN 2160 WHEN 1 THEN 1080
         |      WHEN 2 THEN 720 ELSE 480 END AS src_h,
-        |    ('0x' || substring(md5('vd:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 540 + 60 AS dur_s,
-        |    ('0x' || substring(md5('vc:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 AS cx
+        |    ${duckMd5Bits("vd", "o_orderkey", 6)} % 540 + 60 AS dur_s,
+        |    ${duckMd5Bits("vc", "o_orderkey", 6)} % 100 AS cx
         |  FROM orders),
         |r0 AS (SELECT * FROM (VALUES (2160, 12000), (1080, 5000), (720, 2500),
         |  (480, 1000), (360, 600)) AS v(h, kbps_base)),
@@ -2559,10 +2559,10 @@ object Round16Ops extends Family {
         |FROM c GROUP BY 1 ORDER BY src_cls""".stripMargin,
 
     "llm_router_cascade" ->
-      """WITH q0 AS (
+      s"""WITH q0 AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    ('0x' || substring(md5('rd:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 AS diff,
-        |    ('0x' || substring(md5('rn:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 21 - 10 AS nz
+        |    ${duckMd5Bits("rd", "o_orderkey", 6)} % 100 AS diff,
+        |    ${duckMd5Bits("rn", "o_orderkey", 6)} % 21 - 10 AS nz
         |  FROM orders),
         |q1 AS (
         |  SELECT k, diff,
@@ -2590,7 +2590,7 @@ object Round16Ops extends Family {
          |  SELECT CAST(p_partkey AS BIGINT) AS p,
          |    CAST(p_partkey % 3 AS INT) AS cls,
          |    (p_partkey % 3 + 1) * 100000 AS budget,
-         |${(0 to 23).map(h => s"    ('0x' || substring(md5('bp$h:' || CAST(p_partkey AS VARCHAR)), 1, 6))::BIGINT % 9000 + 1000 AS dm$h").mkString(",\n")}
+         |${(0 to 23).map(h => s"    ${duckMd5Bits(s"bp$h", "p_partkey", 6)} % 9000 + 1000 AS dm$h").mkString(",\n")}
          |  FROM part),
          |$stepCtes
          |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_campaigns,
@@ -2602,12 +2602,12 @@ object Round16Ops extends Family {
     },
 
     "llm_judge_position_bias" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    CAST(o_orderkey % 2 AS INT) AS jcls,
-        |    ('0x' || substring(md5('jb:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 2 = 0 AS a_better,
-        |    ('0x' || substring(md5('j1:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 AS d1,
-        |    ('0x' || substring(md5('j2:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 AS d2
+        |    ${duckMd5Bits("jb", "o_orderkey", 6)} % 2 = 0 AS a_better,
+        |    ${duckMd5Bits("j1", "o_orderkey", 6)} % 100 AS d1,
+        |    ${duckMd5Bits("j2", "o_orderkey", 6)} % 100 AS d2
         |  FROM orders),
         |x AS (
         |  SELECT k, jcls, a_better,
@@ -2631,10 +2631,10 @@ object Round16Ops extends Family {
         |FROM g ORDER BY jcls""".stripMargin,
 
     "mm_subtitle_drift" ->
-      """WITH cues AS (
+      s"""WITH cues AS (
         |  SELECT v, cls, t,
         |    (CASE WHEN cls = 1 THEN 2 * t WHEN cls = 2 THEN 5 * t ELSE 0 END)
-        |      + ('0x' || substring(md5('sd:' || CAST(v AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 9 - 4 AS off
+        |      + ${duckMd5Bits("'sd:' || CAST(v AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 9 - 4 AS off
         |  FROM (SELECT CAST(doc_id AS BIGINT) AS v,
         |      CAST(doc_id % 3 AS INT) AS cls FROM documents) q,
         |    generate_series(0, 23) AS g(t)),
@@ -2650,16 +2650,16 @@ object Round16Ops extends Family {
         |FROM x GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "join_garnishment_priority" ->
-      """WITH emp AS (
+      s"""WITH emp AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    (('0x' || substring(md5('gd:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 3000 + 1000) AS di
+        |    (${duckMd5Bits("gd", "c_custkey", 6)} % 3000 + 1000) AS di
         |  FROM customer),
         |e2 AS (SELECT k, (di * 25) // 100 AS ceiling FROM emp),
         |ords AS (
         |  SELECT e2.k, e2.ceiling, g.pri,
-        |    ('0x' || substring(md5('ga:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)), 1, 6))::BIGINT % 400 + 50 AS amount
+        |    ${duckMd5Bits("'ga:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)", 6)} % 400 + 50 AS amount
         |  FROM e2, generate_series(1, 3) AS g(pri)
-        |  WHERE ('0x' || substring(md5('go:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)), 1, 6))::BIGINT % 10 < 6),
+        |  WHERE ${duckMd5Bits("'go:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)", 6)} % 10 < 6),
         |al AS (
         |  SELECT k, pri, amount, ceiling,
         |    CAST(coalesce(SUM(amount) OVER (PARTITION BY k ORDER BY pri
@@ -2677,12 +2677,12 @@ object Round16Ops extends Family {
         |FROM x GROUP BY 1 ORDER BY pri""".stripMargin,
 
     "win_vwap_execution" ->
-      """WITH ticks AS (
+      s"""WITH ticks AS (
         |  SELECT m, cls, t,
-        |    10000 + ('0x' || substring(md5('vp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 200 - 100 AS p,
-        |    ('0x' || substring(md5('vv:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 900 + 100 AS v,
-        |    ('0x' || substring(md5('vx:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 3 = 0 AS pick,
-        |    ('0x' || substring(md5('ve:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 90 + 10 AS ev0
+        |    10000 + ${duckMd5Bits("'vp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 200 - 100 AS p,
+        |    ${duckMd5Bits("'vv:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS v,
+        |    ${duckMd5Bits("'vx:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3 = 0 AS pick,
+        |    ${duckMd5Bits("'ve:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 90 + 10 AS ev0
         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
         |      CAST(s_suppkey % 2 AS INT) AS cls FROM supplier) q,
         |    generate_series(0, 23) AS g(t)),
@@ -2711,16 +2711,16 @@ object Round16Ops extends Family {
         |FROM f GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "fn_ssn_validate" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    1 + ('0x' || substring(md5('sa:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 898 AS area0,
-        |    1 + ('0x' || substring(md5('sg:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 99 AS grp0,
-        |    1 + ('0x' || substring(md5('sn:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 9999 AS ser0
+        |    1 + ${duckMd5Bits("sa", "c_custkey", 6)} % 898 AS area0,
+        |    1 + ${duckMd5Bits("sg", "c_custkey", 6)} % 99 AS grp0,
+        |    1 + ${duckMd5Bits("sn", "c_custkey", 6)} % 9999 AS ser0
         |  FROM customer),
         |x AS (
         |  SELECT k,
         |    CASE WHEN k % 23 = 4 THEN 666
-        |      WHEN k % 23 = 5 THEN 900 + ('0x' || substring(md5('s9:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 100
+        |      WHEN k % 23 = 5 THEN 900 + ${duckMd5Bits("s9", "k", 4)} % 100
         |      ELSE area0 END AS area,
         |    CASE WHEN k % 23 = 6 THEN 0 ELSE grp0 END AS grp,
         |    CASE WHEN k % 23 = 7 THEN 0 ELSE ser0 END AS ser
@@ -2739,8 +2739,8 @@ object Round16Ops extends Family {
 
     "service_deadline_budgets" -> {
       def lat(salt: String, base: Int, w: Int) =
-        s"""(('0x' || substring(md5('$salt' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % $w + $base
-           | + (CASE WHEN ('0x' || substring(md5('${salt}t' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 20 = 0
+        s"""(${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $w + $base
+           | + (CASE WHEN ${duckMd5Bits(s"'${salt}t' || CAST(k AS VARCHAR)", 6)} % 20 = 0
            |    THEN 400 ELSE 0 END))""".stripMargin
       s"""WITH t AS (
          |  SELECT CAST(o_orderkey AS BIGINT) AS k,
@@ -2797,11 +2797,11 @@ object Round16Ops extends Family {
         |FROM w GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "win_orderbook_imbalance" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT m, cls, t,
-        |    ('0x' || substring(md5('ob:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 900 + 100 AS bid,
-        |    ('0x' || substring(md5('oa:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 900 + 100 AS ask,
-        |    ('0x' || substring(md5('om:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 10 < 7 AS agree
+        |    ${duckMd5Bits("'ob:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS bid,
+        |    ${duckMd5Bits("'oa:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS ask,
+        |    ${duckMd5Bits("'om:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 10 < 7 AS agree
         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
         |      CAST(s_suppkey % 2 AS INT) AS cls FROM supplier) q,
         |    generate_series(0, 23) AS g(t)),
@@ -2828,7 +2828,7 @@ object Round16Ops extends Family {
 
     "agg_settlement_fails" -> {
       def fail(j: Int) =
-        s"(('0x' || substring(md5('sf$j:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 10 < 3 + 3 * (k % 2))"
+        s"(${duckMd5Bits(s"sf$j", "k", 6)} % 10 < 3 + 3 * (k % 2))"
       s"""WITH t AS (
          |  SELECT CAST(o_orderkey AS BIGINT) AS k,
          |    CAST(o_orderkey % 2 AS INT) AS cp_cls
@@ -2853,13 +2853,13 @@ object Round16Ops extends Family {
 
     "fn_bic_validate" -> {
       def ch(i: Int) =
-        s"chr(65 + CAST(('0x' || substring(md5('bc:' || CAST(k AS VARCHAR)), $i, 2))::BIGINT % 26 AS INT))"
+        s"chr(65 + CAST(${duckMd5Bits("'bc:' || CAST(k AS VARCHAR)", 2, i)} % 26 AS INT))"
       s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
          |b AS (
          |  SELECT k,
          |    (['US', 'GB', 'DE', 'FR', 'XX'])[CAST(k % 5 AS INT) + 1] AS country,
          |    ${ch(1)} || ${ch(3)} || ${ch(5)} || ${ch(7)} AS bank,
-         |    lpad(CAST(('0x' || substring(md5('bl:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 100 AS VARCHAR), 2, '0') AS loc
+         |    lpad(CAST(${duckMd5Bits("bl", "k", 4)} % 100 AS VARCHAR), 2, '0') AS loc
          |  FROM t),
          |c AS (SELECT k, country, bank || country || loc AS bic0 FROM b),
          |e AS (
@@ -2884,13 +2884,13 @@ object Round16Ops extends Family {
     },
 
     "llm_retriever_ab_mrr" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    CAST(o_orderkey % 3 AS INT) AS cls,
-        |    ('0x' || substring(md5('ma:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 20 + 1 AS ra,
-        |    CASE WHEN ('0x' || substring(md5('mb:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 10 < 7
-        |      THEN ('0x' || substring(md5('mc:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 8 + 1
-        |      ELSE ('0x' || substring(md5('mc:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 20 + 1
+        |    ${duckMd5Bits("ma", "o_orderkey", 6)} % 20 + 1 AS ra,
+        |    CASE WHEN ${duckMd5Bits("mb", "o_orderkey", 6)} % 10 < 7
+        |      THEN ${duckMd5Bits("mc", "o_orderkey", 6)} % 8 + 1
+        |      ELSE ${duckMd5Bits("mc", "o_orderkey", 6)} % 20 + 1
         |    END AS rb
         |  FROM orders)
         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_queries,
@@ -2901,12 +2901,12 @@ object Round16Ops extends Family {
         |FROM t GROUP BY 1 ORDER BY cls""".stripMargin,
 
     "join_four_eyes" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey % 200 AS req,
         |    CASE WHEN o_orderkey % 41 = 3 THEN o_orderkey % 200
         |      WHEN o_orderkey % 43 = 5
         |        THEN (o_orderkey % 200) - (o_orderkey % 200) % 10 + ((o_orderkey % 200) + 1) % 10
-        |      ELSE ('0x' || substring(md5('ap:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 200
+        |      ELSE ${duckMd5Bits("ap", "o_orderkey", 6)} % 200
         |    END AS appr
         |  FROM orders)
         |SELECT CAST(k % 4 AS INT) AS cohort,
@@ -2938,10 +2938,10 @@ object Round16Ops extends Family {
         |FROM x GROUP BY 1 ORDER BY dim_block""".stripMargin,
 
     "service_maxmin_fair" ->
-      """WITH ten AS (
+      s"""WITH ten AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS tn, c_custkey % 40 AS pool,
         |    CAST((c_custkey % 40) % 2 AS INT) AS cls,
-        |    ('0x' || substring(md5('mf:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT
+        |    ${duckMd5Bits("mf", "c_custkey", 6)}
         |      % (120 + ((c_custkey % 40) % 2) * 400) + 20 AS dem
         |  FROM customer),
         |ranked AS (
@@ -3005,12 +3005,12 @@ object Round16Ops extends Family {
         |GROUP BY 1 ORDER BY lvl""".stripMargin,
 
     "join_temporal_reachability" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT
         |    CASE WHEN t % 90 < 3 THEN ((t // 90) * 10) % 1000 + (t % 90)
-        |      ELSE ('0x' || substring(md5('ts:' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 1000 END AS src,
+        |      ELSE ${duckMd5Bits("ts", "t", 6)} % 1000 END AS src,
         |    CASE WHEN t % 90 < 3 THEN ((t // 90) * 10) % 1000 + (t % 90) + 1
-        |      ELSE ('0x' || substring(md5('td:' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 1000 END AS dst,
+        |      ELSE ${duckMd5Bits("td", "t", 6)} % 1000 END AS dst,
         |    t
         |  FROM (SELECT CAST(o_orderkey AS BIGINT) AS t FROM orders) q0),
         |e2 AS (SELECT * FROM e WHERE src <> dst),
@@ -3027,9 +3027,9 @@ object Round16Ops extends Family {
         |  (SELECT CAST(SUM(CASE WHEN t % 90 = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM e2) AS n_planted_starts""".stripMargin,
 
     "agg_demand_censoring" ->
-      """WITH obs AS (
+      s"""WITH obs AS (
         |  SELECT p, cls, t,
-        |    ('0x' || substring(md5('dm:' || CAST(p AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 40
+        |    ${duckMd5Bits("'dm:' || CAST(p AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 40
         |      + cls * 10 AS demand
         |  FROM (SELECT CAST(p_partkey AS BIGINT) AS p,
         |      CAST(p_partkey % 3 AS INT) AS cls FROM part) q,
@@ -3046,12 +3046,12 @@ object Round16Ops extends Family {
         |FROM r ORDER BY cls""".stripMargin,
 
     "llm_moe_capacity_drop" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey // 256 AS batch,
-        |    CASE WHEN ('0x' || substring(md5('me:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 10 < 3
+        |    CASE WHEN ${duckMd5Bits("me", "o_orderkey", 6)} % 10 < 3
         |      THEN CAST(0 AS BIGINT)
-        |      ELSE ('0x' || substring(md5('m1:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 8 END AS e1,
-        |    ('0x' || substring(md5('m2:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 8 AS e2x
+        |      ELSE ${duckMd5Bits("m1", "o_orderkey", 6)} % 8 END AS e1,
+        |    ${duckMd5Bits("m2", "o_orderkey", 6)} % 8 AS e2x
         |  FROM orders),
         |t2 AS (SELECT *, CASE WHEN e2x = e1 THEN (e2x + 1) % 8 ELSE e2x END AS e2 FROM toks),
         |bs AS (SELECT batch, COUNT(*) AS bn, (COUNT(*) * 125) // (8 * 100) + 1 AS cap
@@ -3076,9 +3076,9 @@ object Round16Ops extends Family {
         |FROM routed GROUP BY 1 ORDER BY e1""".stripMargin,
 
     "fn_counter_rollover" ->
-      """WITH obs AS (
+      s"""WITH obs AS (
         |  SELECT m, cls, t,
-        |    (1 + m % 3) * (('0x' || substring(md5('cr:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 3000000) AS inc
+        |    (1 + m % 3) * (${duckMd5Bits("'cr:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3000000) AS inc
         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
         |      CAST(s_suppkey % 3 AS INT) AS cls FROM supplier) q,
         |    generate_series(0, 23) AS g(t)),
@@ -3135,12 +3135,12 @@ object Round16Ops extends Family {
         |FROM rules ORDER BY rule""".stripMargin,
 
     "warehouse_write_audit_publish" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(0 AS BIGINT) AS n_nulls
         |  FROM orders WHERE o_orderkey % 3 = 1),
         |b AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |    CAST(SUM(CASE WHEN ('0x' || substring(md5('wb:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 < 12
+        |    CAST(SUM(CASE WHEN ${duckMd5Bits("wb", "o_orderkey", 6)} % 100 < 12
         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls
         |  FROM orders WHERE o_orderkey % 3 = 2),
         |base AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM orders WHERE o_orderkey % 3 = 0)
@@ -3181,15 +3181,15 @@ object Round16Ops extends Family {
 
     "fn_nhs_number" -> {
       def dig(i: Int) =
-        s"('0x' || substring(md5('nh:' || CAST(k AS VARCHAR)), $i, 1))::BIGINT % 10"
+        s"${duckMd5Bits("'nh:' || CAST(k AS VARCHAR)", 1, i)} % 10"
       val wsum = (1 to 9).map(i => s"(${dig(i)}) * ${11 - i}").mkString(" + ")
       val wdelta = (1 to 9).map(i => s"WHEN cpos = $i THEN ${11 - i} * cdelta")
         .mkString("CASE ", " ", " END")
       s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
          |a AS (
          |  SELECT k, ($wsum) % 11 AS r,
-         |    ('0x' || substring(md5('np:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 9 + 1 AS cpos,
-         |    ('0x' || substring(md5('nd:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 9 + 1 AS cdelta
+         |    ${duckMd5Bits("np", "k", 4)} % 9 + 1 AS cpos,
+         |    ${duckMd5Bits("nd", "k", 4)} % 9 + 1 AS cdelta
          |  FROM t),
          |b AS (
          |  SELECT k, r = 1 AS unissuable, (11 - r) % 11 AS chk,
@@ -3212,7 +3212,7 @@ object Round16Ops extends Family {
     "fn_bech32_check" -> {
       val hrpState = bech32Fold(1L, Seq(3L, 3L, 0L, 2L, 3L))
       def grp(j: Int) =
-        s"('0x' || substring(md5('bw:' || CAST(k AS VARCHAR)), ${2 * j + 1}, 2))::BIGINT % 32"
+        s"${duckMd5Bits("'bw:' || CAST(k AS VARCHAR)", 2, 2 * j + 1)} % 32"
       val dx: (String, String) => String = (a, b) => s"xor($a, $b)"
       val dl: (String, Int) => String = (e, n) => s"($e << $n)"
       val dr: (String, Int) => String = (e, n) => s"($e >> $n)"
@@ -3226,8 +3226,8 @@ object Round16Ops extends Family {
       s"""WITH t AS (
          |  SELECT CAST(c_custkey AS BIGINT) AS k,
          |    c_custkey % 5 = 2 AS corrupt,
-         |    ('0x' || substring(md5('bp:' || CAST(c_custkey AS VARCHAR)), 1, 4))::BIGINT % 12 AS cpos,
-         |    ('0x' || substring(md5('bd:' || CAST(c_custkey AS VARCHAR)), 1, 4))::BIGINT % 31 + 1 AS cdelta
+         |    ${duckMd5Bits("bp", "c_custkey", 4)} % 12 AS cpos,
+         |    ${duckMd5Bits("bd", "c_custkey", 4)} % 31 + 1 AS cdelta
          |  FROM customer),
          |base AS (
          |  SELECT *,
@@ -3252,7 +3252,7 @@ object Round16Ops extends Family {
       }.mkString(",\n")
       s"""WITH obs AS (
          |  SELECT m, cls, t,
-         |    ('0x' || substring(md5('hk:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 3
+         |    ${duckMd5Bits("'hk:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3
          |      + (CASE WHEN m % 3 = 2 AND t BETWEEN 8 AND 10 THEN 4 ELSE 0 END) AS n
          |  FROM (SELECT CAST(c_custkey AS BIGINT) AS m,
          |      CAST(c_custkey % 3 AS INT) AS cls FROM customer) q,
@@ -3271,14 +3271,14 @@ object Round16Ops extends Family {
     },
 
     "join_propensity_match" ->
-      """WITH units AS (
+      s"""WITH units AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k,
         |    300000 + (c_custkey % 7) * 50000
-        |      + ('0x' || substring(md5('ps:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 100000 AS score
+        |      + ${duckMd5Bits("ps", "c_custkey", 6)} % 100000 AS score
         |  FROM customer),
         |u2 AS (
         |  SELECT k, score,
-        |    ('0x' || substring(md5('pt:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 1000
+        |    ${duckMd5Bits("pt", "k", 6)} % 1000
         |      < 100 + score // 2000 AS treated,
         |    score // 20000 AS bucket
         |  FROM units),
@@ -3313,10 +3313,10 @@ object Round16Ops extends Family {
       s"""WITH obs AS (
          |  SELECT k, cls, e,
          |    CASE WHEN k % 3 = 0
-         |      THEN 800 + ('0x' || substring(md5('dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)), 1, 6))::BIGINT % 150
+         |      THEN 800 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 150
          |      WHEN k % 3 = 2
-         |      THEN 100 + ('0x' || substring(md5('dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)), 1, 6))::BIGINT % 150
-         |      ELSE 200 + ('0x' || substring(md5('dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)), 1, 6))::BIGINT % 600
+         |      THEN 100 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 150
+         |      ELSE 200 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 600
          |    END AS conf
          |  FROM (SELECT CAST(doc_id AS BIGINT) AS k,
          |      CAST(doc_id % 3 AS INT) AS cls FROM documents) q,
@@ -3350,7 +3350,7 @@ object Round16Ops extends Family {
       }.mkString(",\n")
       s"""WITH obs AS (
          |  SELECT m, cls, t,
-         |    55 + 25 * cls + ('0x' || substring(md5('bp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)), 1, 6))::BIGINT % 51 AS a
+         |    55 + 25 * cls + ${duckMd5Bits("'bp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 51 AS a
          |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
          |      CAST(s_suppkey % 3 AS INT) AS cls FROM supplier) q,
          |    generate_series(0, 23) AS g(t)),
@@ -3400,11 +3400,11 @@ object Round16Ops extends Family {
 
     "fn_isin_check" -> {
       def md(i: Int) =
-        s"('0x' || substring(md5('is:' || CAST(k AS VARCHAR)), $i, 1))::BIGINT % 10"
+        s"${duckMd5Bits("'is:' || CAST(k AS VARCHAR)", 1, i)} % 10"
       val cc = (1 to 4).map(j =>
         s"(CASE WHEN k % 3 = 0 THEN ${Seq(3, 0, 2, 8)(j - 1)} WHEN k % 3 = 1 THEN ${Seq(1, 6, 1, 1)(j - 1)} ELSE ${Seq(1, 3, 1, 4)(j - 1)} END)")
       val letter =
-        s"(10 + ('0x' || substring(md5('il:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 26)"
+        s"(10 + ${duckMd5Bits("il", "k", 4)} % 26)"
       val ds: Seq[String] = cc ++ Seq(s"($letter // 10)", s"($letter % 10)") ++
         (1 to 8).map(i => s"(${md(i)})")
       def luhn2(e: String) = s"(CASE WHEN 2 * $e > 9 THEN 2 * $e - 9 ELSE 2 * $e END)"
@@ -3417,8 +3417,8 @@ object Round16Ops extends Family {
       s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
          |a AS (
          |  SELECT k, ($sum14) AS s14, k % 8 = 5 AS corrupt,
-         |    ('0x' || substring(md5('ip:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 14 + 1 AS cpos,
-         |    ('0x' || substring(md5('ic:' || CAST(k AS VARCHAR)), 1, 4))::BIGINT % 9 + 1 AS cdelta
+         |    ${duckMd5Bits("ip", "k", 4)} % 14 + 1 AS cpos,
+         |    ${duckMd5Bits("ic", "k", 4)} % 9 + 1 AS cdelta
          |  FROM t),
          |b AS (SELECT *, (10 - s14 % 10) % 10 AS chk, ($dorig) AS dorig FROM a),
          |c AS (SELECT *, (dorig + cdelta) % 10 AS dnew FROM b),
@@ -3438,7 +3438,7 @@ object Round16Ops extends Family {
     },
 
     "join_wash_trades" ->
-      """WITH trades AS (
+      s"""WITH trades AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
         |    o_orderkey % 500 AS acct,
@@ -3446,8 +3446,8 @@ object Round16Ops extends Family {
         |    o_orderkey % 7 = 3 AS itf,
         |    CASE WHEN o_orderkey % 11 = 6
         |      THEN (o_orderkey % 500) - (o_orderkey % 500) % 5
-        |        + ('0x' || substring(md5('wc:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 5
-        |      ELSE ('0x' || substring(md5('wo:' || CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 500
+        |        + ${duckMd5Bits("wc", "o_orderkey", 6)} % 5
+        |      ELSE ${duckMd5Bits("wo", "o_orderkey", 6)} % 500
         |    END AS counter
         |  FROM orders),
         |owners AS (
@@ -3469,10 +3469,10 @@ object Round16Ops extends Family {
         |FROM j GROUP BY 1 ORDER BY symbol""".stripMargin,
 
     "llm_agent_loop_detect" ->
-      """WITH steps AS (
+      s"""WITH steps AS (
         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
         |    CAST(o_orderkey % 3 AS INT) AS cls, g.i,
-        |    ('0x' || substring(md5('tc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(g.i AS VARCHAR)), 1, 6))::BIGINT % 10
+        |    ${duckMd5Bits("'tc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(g.i AS VARCHAR)", 6)} % 10
         |      >= 7 - 2 * (o_orderkey % 3) AS fail
         |  FROM orders, generate_series(0, 15) AS g(i)),
         |f AS (
@@ -3517,8 +3517,8 @@ object Round16Ops extends Family {
 
     "service_hedge_delay_sweep" -> {
       def lat(salt: String) =
-        s"""('0x' || substring(md5('$salt' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 100 + 50
-           | + (CASE WHEN ('0x' || substring(md5('${salt}t' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 20 = 0
+        s"""${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % 100 + 50
+           | + (CASE WHEN ${duckMd5Bits(s"'${salt}t' || CAST(k AS VARCHAR)", 6)} % 20 = 0
            |    THEN 900 ELSE 0 END)""".stripMargin
       s"""WITH t AS (
          |  SELECT k, l1, l2, CAST(v.delay AS BIGINT) AS delay,
@@ -3542,8 +3542,8 @@ object Round16Ops extends Family {
     "join_score_fusion" -> {
       def score(salt: String, gBase: Int, gW: Int, iW: Int) =
         s"""CASE WHEN k % 4 = 0
-           | THEN $gBase + ('0x' || substring(md5('$salt' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % $gW
-           | ELSE ('0x' || substring(md5('$salt' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % $iW END""".stripMargin
+           | THEN $gBase + ${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $gW
+           | ELSE ${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $iW END""".stripMargin
       s"""WITH t AS (
          |  SELECT k, k % 4 = 0 AS genuine, face, voice, doc,
          |    (3 * face + 2 * voice + doc) // 6 AS fused
@@ -3586,18 +3586,18 @@ object Round16Ops extends Family {
     },
 
     "graph_max_flow" ->
-      """WITH base AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
+      s"""WITH base AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
         |sup AS (
         |  SELECT k, s, CAST(SUM(s) OVER (ORDER BY k) AS BIGINT) AS se,
         |    CAST(SUM(s) OVER (ORDER BY k) - s AS BIGINT) AS ss
         |  FROM (SELECT k,
-        |      ('0x' || substring(md5('mfs:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 200 + 500 AS s
+        |      ${duckMd5Bits("mfs", "k", 6)} % 200 + 500 AS s
         |    FROM base) q),
         |dem AS (
         |  SELECT k, dc, CAST(SUM(dc) OVER (ORDER BY k) AS BIGINT) AS de,
         |    CAST(SUM(dc) OVER (ORDER BY k) - dc AS BIGINT) AS ds
         |  FROM (SELECT k,
-        |      ('0x' || substring(md5('mfd:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % 200 + 100 AS dc
+        |      ${duckMd5Bits("mfd", "k", 6)} % 200 + 100 AS dc
         |    FROM base) q),
         |arcs AS (
         |  SELECT sup.k AS sk, dem.k AS dk, sup.s, dem.dc,
@@ -3628,15 +3628,15 @@ object Round16Ops extends Family {
         |FROM tot, cut, scl, dcl""".stripMargin,
 
     "join_geo_cell" ->
-      """WITH pts AS (
+      s"""WITH pts AS (
         |  SELECT k, gc,
         |    (gc % 4) * 262144 + 131072 + ox % 6001 - 3000 AS x,
         |    (gc // 4) * 262144 + 131072 + oy % 6001 - 3000 AS y
         |  FROM (
         |    SELECT CAST(p_partkey AS BIGINT) AS k,
-        |      ('0x' || substring(md5('gc:' || CAST(p_partkey AS VARCHAR)), 1, 6))::BIGINT % 16 AS gc,
-        |      ('0x' || substring(md5('gox:' || CAST(p_partkey AS VARCHAR)), 1, 6))::BIGINT AS ox,
-        |      ('0x' || substring(md5('goy:' || CAST(p_partkey AS VARCHAR)), 1, 6))::BIGINT AS oy
+        |      ${duckMd5Bits("gc", "p_partkey", 6)} % 16 AS gc,
+        |      ${duckMd5Bits("gox", "p_partkey", 6)} AS ox,
+        |      ${duckMd5Bits("goy", "p_partkey", 6)} AS oy
         |    FROM part) q),
         |cc AS (
         |  SELECT k, x, y,
@@ -3679,7 +3679,7 @@ object Round16Ops extends Family {
       val isq = Round12cOps.duckIsqrt("var_floor * lt")
       s"""WITH obs AS (
          |  SELECT p, cls, i,
-         |    ('0x' || substring(md5('sd:' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 6))::BIGINT
+         |    ${duckMd5Bits("'sd:' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 6)}
          |      % (20 * (cls + 1)) + 100 AS x
          |  FROM (SELECT CAST(p_partkey AS BIGINT) AS p,
          |      CAST(p_partkey % 5 AS INT) AS cls FROM part) q,
@@ -3729,7 +3729,7 @@ object Round16Ops extends Family {
         |FROM t GROUP BY 1 ORDER BY lang""".stripMargin,
 
     "llm_ann_index_delete" ->
-      """WITH pos AS (SELECT CAST(i AS BIGINT) AS pos FROM generate_series(0, 63) AS t(i)),
+      s"""WITH pos AS (SELECT CAST(i AS BIGINT) AS pos FROM generate_series(0, 63) AS t(i)),
         |raw AS (
         |  SELECT e.vec_id, p.pos,
         |    CAST(FLOOR(CAST(e.embedding[p.pos + 1] AS DOUBLE) * 10000) AS BIGINT) AS xm
@@ -3741,7 +3741,7 @@ object Round16Ops extends Family {
         |md AS (SELECT GREATEST(1, CAST(FLOOR(SQRT(CAST(t AS DOUBLE))) AS BIGINT)) AS m FROM szs),
         |cent AS (
         |  SELECT r.vec_id AS cid, r.pos, r.xm AS cm FROM raw r, md
-        |  WHERE ('0x' || substring(md5(CAST(r.vec_id AS VARCHAR)), 1, 8))::BIGINT % md.m = 0),
+        |  WHERE ${duckMd5Bits("CAST(r.vec_id AS VARCHAR)", 8)} % md.m = 0),
         |asg AS (
         |  SELECT vec_id, cid AS cluster FROM (
         |    SELECT r.vec_id, c.cid,
@@ -3826,11 +3826,11 @@ object Round16Ops extends Family {
       val srt = Round12cOps.duckIsqrt("(10000 * clicks * (views - clicks)) // views + 9604")
       s"""WITH t AS (
          |  SELECT CAST(p_partkey % 3 AS INT) AS cohort, p_partkey AS k,
-         |    ('0x' || substring(md5('wv:' || CAST(p_partkey AS VARCHAR)), 1, 6))::BIGINT % 100 AS views
+         |    ${duckMd5Bits("wv", "p_partkey", 6)} % 100 AS views
          |  FROM part),
          |c AS (
          |  SELECT cohort, views,
-         |    ('0x' || substring(md5('wc:' || CAST(k AS VARCHAR)), 1, 6))::BIGINT % (views + 1) AS clicks
+         |    ${duckMd5Bits("wc", "k", 6)} % (views + 1) AS clicks
          |  FROM t WHERE views > 0),
          |w AS (
          |  SELECT cohort, views, clicks,
@@ -3852,12 +3852,12 @@ object Round16Ops extends Family {
     },
 
     "agg_james_stein" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT CAST(c_custkey AS BIGINT) AS k,
         |    CAST(c_custkey % 3 AS INT) AS cohort,
         |    5000 + (c_custkey % 3) * 200 AS theta,
         |    5000 + (c_custkey % 3) * 200
-        |      + ('0x' || substring(md5('js:' || CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 199 - 99 AS x
+        |      + ${duckMd5Bits("js", "c_custkey", 6)} % 199 - 99 AS x
         |  FROM customer),
         |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS kc,
         |    (CAST(SUM(x) AS BIGINT) * 1000) // COUNT(*) AS xbar_milli

@@ -194,7 +194,7 @@ object Showcase extends Family {
         .agg(
           sum(when(col("supp_nation") === "NATION_5",
             dec(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            .otherwise(lit(0).cast("decimal(18,4)"))).as("nat"),
+            .otherwise(dec(lit(0)))).as("nat"),
           sum(dec(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("tot"))
         .select(col("o_year"),
           col("nat").cast("double").as("nation_rev"),
@@ -214,7 +214,7 @@ object Showcase extends Family {
         .agg(
           sum(when(col("p_type") === "PROMO",
             dec(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-            .otherwise(lit(0).cast("decimal(18,4)"))).as("promo"),
+            .otherwise(dec(lit(0)))).as("promo"),
           sum(dec(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("tot"))
         .select(
           col("promo").cast("double").as("promo_rev"),

@@ -21,9 +21,9 @@ object UlidOracle {
     val r1Chars = (7 to 0 by -1).map(k => dig("r1", k)).mkString(" || ")
     val r2Chars = (7 to 0 by -1).map(k => dig("r2", k)).mkString(" || ")
     s"""WITH e AS (SELECT event_id, epoch_us(ts) // 1000 AS ts_ms,
-       |    ('0x' || substring(md5('u1:' || CAST(event_id AS VARCHAR)), 1, 10))::BIGINT
+       |    ${duckMd5Bits("u1", "event_id", 10)}
        |      % 1099511627776 AS r1,
-       |    ('0x' || substring(md5('u2:' || CAST(event_id AS VARCHAR)), 1, 10))::BIGINT
+       |    ${duckMd5Bits("u2", "event_id", 10)}
        |      % 1099511627776 AS r2
        |  FROM events WHERE event_id % 17 = 0),
        |u AS (SELECT event_id, ts_ms, r1, r2,

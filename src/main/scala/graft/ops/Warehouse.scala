@@ -560,7 +560,7 @@ object Warehouse extends Family {
           dec(col("o_totalprice")).as("price"))
       val v2 = v1.where(col("k") % 97 =!= 0)
         .select(col("k"),
-          when(col("k") % 89 === 0, col("price") + lit(1).cast("decimal(18,4)"))
+          when(col("k") % 89 === 0, col("price") + dec(lit(1)))
             .otherwise(col("price")).as("price"))
         .unionAll(v1.where(col("k") % 101 === 0)
           .select((col("k") + 100000000L).as("k"), col("price")))
@@ -617,9 +617,7 @@ object Warehouse extends Family {
     "warehouse_table_checksum" -> ((s, d) => {
       def fp(df: DataFrame) = df
         .select(expr(
-          """CAST(conv(substring(md5(concat_ws('|',
-            |  CAST(o_orderkey AS STRING), CAST(o_custkey AS STRING),
-            |  o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,4)) AS STRING))), 2, 15), 16, 10) AS BIGINT)""".stripMargin)
+          md5Bits("concat_ws('|', CAST(o_orderkey AS STRING), CAST(o_custkey AS STRING), o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,4)) AS STRING))", 15, 2))
           .as("h"))
         .agg(count(lit(1)).as("n"),
           expr("CAST(bit_xor(h) AS BIGINT)").as("xsum"))
@@ -996,7 +994,7 @@ object Warehouse extends Family {
         .select(col("o_orderkey"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
         .withColumn("in_sample", expr(
-          "CAST(conv(substring(md5(concat('ts:', CAST(o_orderkey AS STRING))), 1, 8), 16, 10) AS BIGINT) % 8 = 0"))
+          s"${md5Bits("ts", "o_orderkey", 8)} % 8 = 0"))
       o.agg(count(lit(1)).as("n_total"),
           sum("cents").as("true_cents"),
           sum(when(col("in_sample"), 1L).otherwise(0L)).as("n_sample"),
@@ -1331,9 +1329,7 @@ object Warehouse extends Family {
 
     // Same canonical serialization and XOR law; verdicts pinned TRUE.
     "warehouse_table_checksum" ->
-      """WITH h AS (SELECT ('0x' || substring(md5(concat_ws('|',
-        |    CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
-        |    o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,4)) AS VARCHAR))), 2, 15))::BIGINT AS h
+      s"""WITH h AS (SELECT ${duckMd5Bits("concat_ws('|', CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR), o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,4)) AS VARCHAR))", 15, 2)} AS h
         |  FROM orders)
         |SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(bit_xor(h) AS BIGINT) AS xsum,
@@ -1543,9 +1539,9 @@ object Warehouse extends Family {
 
     // Same md5 membership, same scale-up, same sign-safe error.
     "warehouse_tablesample" ->
-      """WITH o AS (SELECT o_orderkey,
+      s"""WITH o AS (SELECT o_orderkey,
         |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-        |    ('0x' || substring(md5('ts:' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 8 = 0 AS in_sample
+        |    ${duckMd5Bits("ts", "o_orderkey", 8)} % 8 = 0 AS in_sample
         |  FROM orders),
         |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
         |    CAST(SUM(cents) AS BIGINT) AS true_cents,

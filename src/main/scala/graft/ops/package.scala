@@ -10,6 +10,38 @@ package object ops {
     * One definition on purpose — if the scale ever changes, every engine
     * pair must move in lockstep or oracles silently diverge. */
   private[ops] def dec(c: Column): Column = c.cast("decimal(18,4)")
+
+  /** THE hash draw, beside the money cast for the same reason: the first
+    * `hex` hex digits of md5(`key`), from digit `from` (1-based), read as
+    * a BIGINT. Every operator and its DuckDB twin draw their "random"
+    * numbers this way and must agree bit for bit, so each dialect renders
+    * the law here and nowhere else. `key` is SQL text (a column
+    * expression); the result is SQL text to splice into `expr` or a query.
+    * At most 15 digits, so the draw fits a signed BIGINT. */
+  private[graft] def md5Bits(key: String, hex: Int, from: Int = 1): String = {
+    checkDraw(hex, from)
+    s"CAST(conv(substring(md5($key), $from, $hex), 16, 10) AS BIGINT)"
+  }
+
+  /** `md5Bits` in DuckDB SQL, for the oracle twin of the same draw. */
+  private[graft] def duckMd5Bits(key: String, hex: Int, from: Int = 1): String = {
+    checkDraw(hex, from)
+    s"('0x' || substring(md5($key), $from, $hex))::BIGINT"
+  }
+
+  /** `md5Bits` of the namespaced key `'ns:' || id`, `id` a SQL expression. */
+  private[graft] def md5Bits(ns: String, id: String, hex: Int): String =
+    md5Bits(s"concat('$ns:', CAST($id AS STRING))", hex)
+
+  /** `duckMd5Bits` of the namespaced key `'ns:' || id`. */
+  private[graft] def duckMd5Bits(ns: String, id: String, hex: Int): String =
+    duckMd5Bits(s"'$ns:' || CAST($id AS VARCHAR)", hex)
+
+  private def checkDraw(hex: Int, from: Int): Unit = {
+    require(hex >= 1 && hex <= 15, s"an md5 draw takes 1 to 15 hex digits to fit a BIGINT, not $hex")
+    require(from >= 1 && from + hex - 1 <= 32,
+      s"an md5 draw of $hex digits from digit $from runs past the 32-digit hash")
+  }
 }
 
 package ops {

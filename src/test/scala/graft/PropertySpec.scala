@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.{duckMd5Bits, md5Bits}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{DotProduct, GraftBridge}
@@ -63,12 +64,22 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     val df = spark.createDataFrame(
       strs.map(Row(_)).asJava,
       StructType(Seq(StructField("s", org.apache.spark.sql.types.StringType))))
-    val got = df.select(expr("CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"))
-      .collect().map(_.getLong(0))
+    // every width an operator draws, plus one draw that starts at digit 2
+    val draws = Seq(1, 2, 4, 6, 8, 10, 12, 15).map(w => (w, 1)) :+ ((15, 2))
+    val got = df.select(draws.map { case (w, from) => expr(md5Bits("s", w, from)) }: _*)
+      .collect()
     val mdRef = java.security.MessageDigest.getInstance("MD5")
-    strs.zip(got).foreach { case (s, g) =>
-      val hex = mdRef.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15)
-      assert(g == java.lang.Long.parseLong(hex, 16), s"hash60($s)")
+    strs.zip(got).foreach { case (s, row) =>
+      val hex = mdRef.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      draws.zipWithIndex.foreach { case ((w, from), i) =>
+        val want = java.lang.Long.parseLong(hex.substring(from - 1, from - 1 + w), 16)
+        assert(row.getLong(i) == want, s"md5Bits($s, $w, $from)")
+      }
     }
+    // a draw must fit a signed BIGINT and stay inside the 32-digit hash
+    assertThrows[IllegalArgumentException](md5Bits("s", 0))
+    assertThrows[IllegalArgumentException](md5Bits("s", 16))
+    assertThrows[IllegalArgumentException](duckMd5Bits("s", 16))
+    assertThrows[IllegalArgumentException](md5Bits("s", 15, 19))
   }
 }
