@@ -44,19 +44,24 @@ def main():
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+    names = [n for n in sorted(sql) if not only or n in only]
     fails = []
-    for name in sorted(sql):
-        if only and name not in only:
-            continue
+
+    def fail(name, reason):
+        # printed as it happens, so a long run shows its failures early
+        fails.append(name)
+        print(f"FAIL {name}: {reason}", flush=True)
+
+    for name in names:
         try:
             want = con.execute(sql[name]).df()
             got = pq.read_table(f"{outdir}/{name}").to_pandas()
             wn, gn = sorted(want.columns), sorted(got.columns)
             if wn != gn:
-                fails.append((name, f"cols spark={gn} duck={wn}"))
+                fail(name, f"cols spark={gn} duck={wn}")
                 continue
             if len(want) != len(got):
-                fails.append((name, f"rows spark={len(got)} duck={len(want)}"))
+                fail(name, f"rows spark={len(got)} duck={len(want)}")
                 continue
             w, g = norm(want, wn), norm(got, wn)
             dt_diff = [k for k in wn if str(w[k].dtype) != str(g[k].dtype)]
@@ -74,16 +79,12 @@ def main():
                 if bad:
                     break
             if bad:
-                fails.append(
-                    (name, f"row {bad[0]} col {bad[1]}: spark={bad[2]} duck={bad[3]}"))
+                fail(name, f"row {bad[0]} col {bad[1]}: spark={bad[2]} duck={bad[3]}")
             else:
-                print(f"OK   {name} ({len(g)} rows)")
+                print(f"OK   {name} ({len(g)} rows)", flush=True)
         except Exception as e:
-            fails.append((name, f"EXC {type(e).__name__}: {str(e)[:300]}"))
-    for n, m in fails:
-        print(f"FAIL {n}: {m}")
-    if not only:
-        print(f"\n{len(sql) - len(fails)}/{len(sql)} oracle queries match")
+            fail(name, f"EXC {type(e).__name__}: {str(e)[:300]}")
+    print(f"\n{len(names) - len(fails)}/{len(names)} oracle queries match")
     sys.exit(1 if fails else 0)
 
 

@@ -1,40 +1,49 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, If, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.graftbridge.{AllPairsCosineStrategy, AsOfJoinStrategy, CosineSimilarity, CosineTopKStrategy, DotProduct, IntSqrt}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.graftbridge.{AllPairsCosineStrategy, AsOfJoinStrategy, CosineSimilarity, CosineTopKStrategy, DamerauLevenshtein, DotProduct, IntSqrt, LongDotProduct, SrpBands, UnicodeNormalize}
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
-/** Config-driven deployment entry point: a cluster sets
-  * `spark.sql.extensions=graft.GraftExtensions` and every session gets the
-  * native functions, the whole-operator strategies, and the domain
-  * optimizer rule at build time — no imperative registration calls.
-  * (`GraftBridge` remains the post-hoc path for sessions the harness
-  * already constructed; both routes install the same objects, and the
-  * strategy/function registrations are idempotent.)
+/** The one way the engine's native Catalyst code reaches a session. Listed
+  * in `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` applies it to every SparkSession built with
+  * this library on the class path (and to its `newSession()` children),
+  * whatever entry point built it, with no conf to set. Operators never
+  * register a function or a strategy themselves: each session gets the
+  * native functions, the whole-operator strategies, the domain optimizer
+  * rule and the AQE runtime rule once, when it is built.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("isqrt"),
-      new ExpressionInfo(classOf[IntSqrt].getName, "isqrt"),
-      (exprs: Seq[Expression]) => IntSqrt(exprs(0))))
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("cosine_sim", classOf[CosineSimilarity])(a => CosineSimilarity(a(0), a(1)))
+    fn("dot_product", classOf[DotProduct])(a => DotProduct(a(0), a(1)))
+    fn("graft_ldot", classOf[LongDotProduct])(a => LongDotProduct(a(0), a(1)))
+    fn("isqrt", classOf[IntSqrt])(a => IntSqrt(a(0)))
+    fn("graft_damerau", classOf[DamerauLevenshtein])(a => DamerauLevenshtein(a(0), a(1)))
+    fn("graft_nfc", classOf[UnicodeNormalize])(a => UnicodeNormalize(a(0), "NFC"))
+    fn("graft_nfd", classOf[UnicodeNormalize])(a => UnicodeNormalize(a(0), "NFD"))
+    // srp_bands(emb, planes, bits): the plane matrix is a plan constant
+    // built on the driver, so its geometry must be known at analysis
+    fn("srp_bands", classOf[SrpBands])(a => SrpBands(a(0),
+      ops.LlmScale.srpPlanes(intArg("srp_bands", "planes", a(1))),
+      intArg("srp_bands", "bits", a(2))))
     e.injectPlannerStrategy(_ => CosineTopKStrategy)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => AllPairsCosineStrategy)
     e.injectOptimizerRule(_ => SelfCosineIdentity)
+    e.injectRuntimeOptimizerRule(_ => OnePartitionSmallSort)
   }
+
+  private def intArg(fn: String, param: String, arg: Expression): Int =
+    if (arg.foldable && arg.dataType == IntegerType) arg.eval().asInstanceOf[Int]
+    else throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+      "funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> "\"INT\""))
 }
 
 /** Domain optimizer rule: cosine of an expression with ITSELF is rewritten

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.expressions.SortOrder
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec}
 import org.apache.spark.sql.internal.SQLConf
-
-/** Listed in `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
-  * so Spark's `ServiceLoader` hands it to every SparkSession built with this
-  * library on the class path, whatever entry point built it. It injects
-  * only `OnePartitionSmallSort`: `GraftExtensions` stays opt-in through
-  * `spark.sql.extensions`.
-  */
-class RuntimeRulesProvider extends SparkSessionExtensionsProvider {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectRuntimeOptimizerRule(_ => OnePartitionSmallSort)
-}
 
 /** AQE runtime rule: finish a small global sort in one partition.
   *

@@ -340,8 +340,9 @@ object ApiSurface extends Family {
     // procedural machinery must be semantically invisible.
     "api_sql_scripting" -> ((s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_script_orders")
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      s.sql(
+      // a script runs when `sql` is called and returns its last result as
+      // a local relation, so the conf is consumed inside the scope
+      withConfs(s)("spark.sql.scripting.enabled" -> "true")(s.sql(
         """BEGIN
           |  DECLARE total_cents BIGINT DEFAULT 0;
           |  DECLARE n_seen BIGINT DEFAULT 0;
@@ -355,7 +356,7 @@ object ApiSurface extends Family {
           |    SET i = i + 1;
           |  END WHILE;
           |  SELECT n_seen, total_cents, CAST(i AS BIGINT) AS n_loops;
-          |END""".stripMargin)
+          |END""".stripMargin))
     }),
 
     "api_sql_execute_immediate" -> ((s, d) => {

@@ -3,9 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.Tables
-import org.apache.spark.sql.graftbridge.CosineSimilarity
 
 /** SURVEY.md §2.8 scalar-function families + §2.9 UDF/UDTF surface.
   *
@@ -282,8 +280,6 @@ object Functions extends Family {
     // DuckDB's list_cosine_similarity (ScalaTest additionally cross-checks
     // a plain-Scala reference implementation).
     "udf_expr_custom" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val p = e.where(col("vec_id") < 5)

@@ -351,10 +351,9 @@ object IcebergRead extends Family {
         .where(col("o_orderkey") % 9 === 0)
         .select(col("fp").as("file_path", fieldId(2147483546L)),
           col("rp").as("pos", fieldId(2147483545L)))
-      val prevWrite = s.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val (fdel, ndel) = try writeDataFile(s, delDf, root, "A-deletes")
-      finally prevWrite.foreach(s.conf.set("spark.sql.parquet.fieldId.write.enabled", _))
+      val (fdel, ndel) = withConfs(s)("spark.sql.parquet.fieldId.write.enabled" -> "true") {
+        writeDataFile(s, delDf, root, "A-deletes")
+      }
       val m3 = s"$root/metadata/m3-deletes.avro"
       val delEntry = {
         val e = entry(1, 1003L, 3L, fdel, ndel)
@@ -425,10 +424,9 @@ object IcebergRead extends Family {
       val delDf = Tables.orders(s, d)
         .where(col("o_orderkey") % 14 === 0)
         .select(col("o_orderkey").as("o_orderkey", fieldId))
-      val prevWrite = s.conf.getOption("spark.sql.parquet.fieldId.write.enabled")
-      s.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-      val (fdel, ndel) = try writeDataFile(s, delDf, root, "eq-deletes")
-      finally prevWrite.foreach(s.conf.set("spark.sql.parquet.fieldId.write.enabled", _))
+      val (fdel, ndel) = withConfs(s)("spark.sql.parquet.fieldId.write.enabled" -> "true") {
+        writeDataFile(s, delDf, root, "eq-deletes")
+      }
       val m3 = s"$root/metadata/m3-eqdeletes.avro"
       val delEntry = {
         val e = entry(1, 1003L, 3L, fdel, ndel)

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{CosineSimilarity, GraftBridge}
 import graft.Tables
 
 /** Extended LLM-training-data operators (SURVEY.md §2.12): the remaining
@@ -312,8 +311,6 @@ object LlmExt extends Family {
     // oracle-verified against the same algorithm in DuckDB SQL (recall@5 vs
     // brute force is additionally asserted in ScalaTest).
     "llm_sim_ann" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       // deterministic coarse quantizer, ~√n centroids: a vector is a
@@ -365,8 +362,6 @@ object LlmExt extends Family {
     // O(pool²) METADATA, the same collect scale as bpeTrain's per-round
     // argmax (at 100 TB the pool is still 12 rows; only the scan grows).
     "llm_mmr_rerank" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val probe = e.orderBy("vec_id").limit(1)
@@ -664,8 +659,6 @@ object LlmExt extends Family {
     // fixture is asserted caught in ScalaTest. A production run adds a
     // per-cluster size cap exactly like nearPairs' dfCap.
     "llm_semdedup" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => CosineSimilarity(exprs(0), exprs(1)))
       val m = kmeansAssign(s, d)
         .join(Tables.embeddings(s, d)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("emb")),

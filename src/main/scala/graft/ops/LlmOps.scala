@@ -3,9 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.Tables
-import org.apache.spark.sql.graftbridge.CosineSimilarity
 
 /** SURVEY.md §2.11 — LLM-training-data pipeline operators: dedup (exact +
   * near-dup), similarity search, text analysis, multimodal join.
@@ -119,8 +117,6 @@ object LlmOps extends Family {
     // using the native CosineSimilarity expression; rank on ROUNDED sims so
     // ordering is identical across engines.
     "llm_sim_topk" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val p = e.where(col("vec_id") < 10)

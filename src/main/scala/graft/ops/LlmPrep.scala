@@ -943,8 +943,6 @@ object LlmPrep extends Family {
     // (engine-identical ordering); one broadcast probe join + a per-
     // anchor ordered-limit.
     "llm_hard_negatives" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => org.apache.spark.sql.graftbridge.CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val p = e.where(col("vec_id") < 10)
@@ -1280,9 +1278,6 @@ object LlmPrep extends Family {
       // exact BIGINT (the 64-dot peaks at ~64·10⁸ ≪ 2⁶³, so the old
       // DECIMAL(38,0) detour was value-identical); the oracle replays
       // bit-for-bit.
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "graft_ldot", exprs =>
-          org.apache.spark.sql.graftbridge.LongDotProduct(exprs(0), exprs(1)))
       def dot(a: String, b: String) = s"graft_ldot($a, $b)"
       val vecs = Tables.embeddings(s, d).select(col("vec_id"),
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 10000) AS BIGINT))")

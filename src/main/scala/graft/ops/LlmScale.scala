@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{DotProduct, GraftBridge}
 import graft.Tables
 
 /** Round-4 LLM-pipeline operators: the sub-quadratic SCALE path for
@@ -418,8 +417,6 @@ object LlmScale extends Family {
     // scoring — in DuckDB SQL, so the op is fully hash-graded despite
     // being approximate.
     "llm_dedup_embed_lsh" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "dot_product",
-        exprs => DotProduct(exprs(0), exprs(1)))
       val (nPlanes, nBands, nBits) = lshConfig(s)
       // `bands` bands × `bits` bits, little-endian per band, via the native
       // SrpBands expression — planes·dim primitive FMAs in one JIT'd loop.
@@ -427,13 +424,11 @@ object LlmScale extends Family {
       // inlines the bit-vector projection into the band-fold lambda and
       // recomputes every dot product per (band, bit) reference — measured
       // 10× the whole bench suite at 128 planes.)
-      GraftBridge.registerFunction(s, "srp_bands",
-        exprs => org.apache.spark.sql.graftbridge.SrpBands(
-          exprs(0), srpPlanes(nPlanes), nBits))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val banded = e.select(col("vec_id"),
-        posexplode(call_function("srp_bands", col("emb"))).as(Seq("bidx", "bval")))
+        posexplode(call_function("srp_bands", col("emb"), lit(nPlanes), lit(nBits)))
+          .as(Seq("bidx", "bval")))
       val cand = banded.as("x").join(banded.as("y"),
           col("x.bidx") === col("y.bidx") && col("x.bval") === col("y.bval")
             && col("x.vec_id") < col("y.vec_id"))

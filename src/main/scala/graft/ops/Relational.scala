@@ -1534,22 +1534,15 @@ object Relational extends Family {
     * so the join is a genuine two-sided shuffle SMJ (the 100 TB fact-join
     * shape). Set/restore around EXECUTION — these knobs are read when the
     * query runs, and a 1 KB advisory size must never leak into other ops. */
-  private[graft] def withSkewAqeConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
+  private[graft] def withSkewAqeConfs[T](s: SparkSession)(body: => T): T =
+    withConfs(s)(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2048",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 
   /** High-value-orders join shared by `join_aqe_bhj_switch` and the
     * PlanShapeSpec broadcast-switch assertion: the filtered dim is tiny
@@ -1566,18 +1559,11 @@ object Relational extends Family {
   /** Conf scope for the AQE broadcast switch: static broadcast OFF (the
     * planner must start from a sort-merge join), adaptive broadcast ON so
     * only the RUNTIME shuffle stats can trigger the rewrite. */
-  private[graft] def withBhjSwitchConfs[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
+  private[graft] def withBhjSwitchConfs[T](s: SparkSession)(body: => T): T =
+    withConfs(s)(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10485760")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10485760")(body)
 
   private def custProj(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d).select(col("c_nationkey").as("nationkey"), col("c_acctbal").as("acctbal"))

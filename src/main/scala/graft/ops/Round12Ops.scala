@@ -163,9 +163,7 @@ object Round12Ops extends Family {
       // cols work). Hive's ORC path reads the same files correctly, so
       // it is pinned for the merge scans and the tiny rollup is
       // checkpointed inside the scope.
-      val prevVec = s.conf.getOption("spark.sql.orc.impl")
-      s.conf.set("spark.sql.orc.impl", "hive")
-      try {
+      withConfs(s)("spark.sql.orc.impl" -> "hive") {
         val dirs = java.nio.file.Files.list(rootP).iterator().asScala
           .map(_.getFileName.toString).toSeq.sorted
         // ACID snapshot resolution: serve the HIGHEST base and only the
@@ -196,9 +194,6 @@ object Round12Ops extends Family {
             sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the conf is restored
-      } finally prevVec match {
-        case Some(p) => s.conf.set("spark.sql.orc.impl", p)
-        case None => s.conf.unset("spark.sql.orc.impl")
       }
     }),
 
@@ -232,9 +227,6 @@ object Round12Ops extends Family {
       // INTERPRETED per element and was ~4 s of this op's 6 s at sf0.1;
       // LongDotProduct computes the identical exact BIGINT Σ a(i)·b(i)
       // inside whole-stage codegen).
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "graft_ldot", exprs =>
-          org.apache.spark.sql.graftbridge.LongDotProduct(exprs(0), exprs(1)))
       def dot(a: String, b: String) = s"graft_ldot($a, $b)"
       val vecs = Tables.embeddings(s, d).select(col("vec_id"),
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 10000) AS BIGINT))")
@@ -1041,9 +1033,7 @@ object Round12Ops extends Family {
       queries("source_hive_acid_read")(s, d).count()
       val root = Scratch.opDir("hive_acid", d)
       val rootP = java.nio.file.Paths.get(root)
-      val prevVec = s.conf.getOption("spark.sql.orc.impl")
-      s.conf.set("spark.sql.orc.impl", "hive")
-      try {
+      withConfs(s)("spark.sql.orc.impl" -> "hive") {
         if (!java.nio.file.Files.exists(rootP.resolve("_COMPACTED"))) {
           val dirs = java.nio.file.Files.list(rootP).iterator().asScala
             .map(_.getFileName.toString).toSeq.sorted
@@ -1079,9 +1069,6 @@ object Round12Ops extends Family {
             sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally prevVec match {
-        case Some(p) => s.conf.set("spark.sql.orc.impl", p)
-        case None => s.conf.unset("spark.sql.orc.impl")
       }
     }),
 

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{GraftBridge, IntSqrt}
 import graft.Tables
 
 /** Round-12 operators, third compilation unit (Round12bOps.scala crossed
@@ -906,12 +905,11 @@ object Round12cOps extends Family {
 
     // EXACT integer square root as a native codegen'd Catalyst
     // expression (IntSqrt.scala: double sqrt + ±1 correction, proven
-    // exact for every non-negative long) — registered post-hoc through
-    // the FunctionRegistry bridge; perfect-square flag and the gap to
+    // exact for every non-negative long) — injected into every session by
+    // GraftExtensions; perfect-square flag and the gap to
     // the next square graded alongside. The oracle mirrors with DuckDB's
     // CASE-corrected FLOOR(SQRT(x)).
     "fn_isqrt_native" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.orders(s, d)
         .where(col("o_orderkey") % 13 === 3)
         .select(col("o_orderkey").as("okey"))
@@ -928,7 +926,6 @@ object Round12cOps extends Family {
     // IntSqrt doing the root: a stddev that reaches a graded column with
     // NO float anywhere (the usual stddev is transcendental-banned).
     "agg_integer_stddev" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           (floor(col("c_acctbal")).cast("bigint") + 1000L).as("dollars"))
@@ -1011,7 +1008,6 @@ object Round12cOps extends Family {
     // IntSqrt of the variance numerator and a sign-split milli ratio
     // grade the whole statistic exactly. Per series, one sort.
     "agg_sharpe_ratio" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       val ord = Window.partitionBy("event_type").orderBy("day")
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
@@ -1086,7 +1082,6 @@ object Round12cOps extends Family {
     // day, IR = S_active/√(n·Σa²−S²) through the native IntSqrt,
     // sign-split milli. The tracking-error statistic with no float.
     "win_information_ratio" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       val ord = Window.partitionBy("event_type").orderBy("day")
       val bars = Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
@@ -1224,7 +1219,6 @@ object Round12cOps extends Family {
     // the native IntSqrt: w = (isqrt(8z+1)−1) DIV 2, then t, y, x fall
     // out. The bijection ℕ²→ℕ graded both directions, float-free.
     "fn_cantor_pairing" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.part(s, d)
         .where(col("p_partkey") % 29 === 11)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -1243,7 +1237,6 @@ object Round12cOps extends Family {
     // through the native IntSqrt; the declared convention is ring k
     // entering at (k, 1−k) going up. Spec replays an imperative walker.
     "fn_ulam_spiral" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.part(s, d)
         .where(col("p_partkey") % 19 === 8)
         .select(col("p_partkey").cast("bigint").as("pk"))

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{GraftBridge, IntSqrt}
 import graft.Tables
 
 /** Round-12 operators, fourth compilation unit (Round12cOps.scala crossed
@@ -175,7 +174,6 @@ object Round12dOps extends Family {
     // (n·Σx²−S²), all integers); Chebyshev's 1−1/k² floor is graded in
     // the spec. One aggregate + one broadcast-back join.
     "agg_chebyshev_coverage" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       val bars = Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           expr("ts_us DIV 86400000000").as("day"),
@@ -465,7 +463,6 @@ object Round12dOps extends Family {
     // float: n-scaled deviations, running cumdev range R·n, σ·n from the
     // native IntSqrt, R/S = R_n·1000 DIV sd_n exact milli per series.
     "agg_hurst_rs" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       val ord = Window.partitionBy("event_type").orderBy("day")
       val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val all = Window.partitionBy("event_type")
@@ -676,7 +673,6 @@ object Round12dOps extends Family {
     // (a+b−c) for sides built to satisfy the triangle inequality by
     // construction; floor area via the native IntSqrt (A = √(16A²)/4).
     "fn_heron_area" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.part(s, d)
         .where(col("p_partkey") % 13 === 8)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -930,7 +926,6 @@ object Round12dOps extends Family {
     // milli through the native IntSqrt (the n-scalings cancel); per
     // segment on positive-shifted balances.
     "agg_coeff_variation" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           (floor(col("c_acctbal")).cast("bigint") + 1000L).as("dollars"))
@@ -1283,7 +1278,6 @@ object Round12dOps extends Family {
     // exact N(r) whose πr² error the spec bounds. Constant explode per
     // radius, embarrassingly parallel.
     "fn_gauss_circle" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt", exprs => IntSqrt(exprs(0)))
       Tables.region(s, d)
         .select(col("r_regionkey").cast("bigint").as("rk"))
         .withColumn("r", expr("20 + rk * 15"))

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{GraftBridge, UnicodeNormalize}
 import graft.Tables
 
 /** Round-13 operators — north-star surfaces per the round-12 verdict's
@@ -32,8 +31,6 @@ object Round13Ops extends Family {
     // has no builtin); one linear scan projection + one tiny rollup,
     // no shuffle beyond the groupBy.
     "llm_unicode_normalize_audit" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "graft_nfc",
-        exprs => UnicodeNormalize(exprs(0), "NFC"))
       val dec = " cafe\u0301" // e + combining acute: NFC composes
       val pre = " caf\u00e9"  // precomposed: NFC-stable
       val grk = " \u03b1\u03b2\u03b3"
@@ -113,9 +110,7 @@ object Round13Ops extends Family {
       }
       // the native ORC reader remaps the 6-field ACID tuple (see
       // source_hive_acid_read); Hive's path is pinned for the scans
-      val prevVec = s.conf.getOption("spark.sql.orc.impl")
-      s.conf.set("spark.sql.orc.impl", "hive")
-      try {
+      withConfs(s)("spark.sql.orc.impl" -> "hive") {
         val dirs = java.nio.file.Files.list(rootP).iterator().asScala
           .map(_.getFileName.toString).toSeq.sorted
         val DeltaRe = """delta_(\d+)_(\d+)""".r
@@ -142,9 +137,6 @@ object Round13Ops extends Family {
             sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally prevVec match {
-        case Some(p) => s.conf.set("spark.sql.orc.impl", p)
-        case None => s.conf.unset("spark.sql.orc.impl")
       }
     }),
 
@@ -378,9 +370,7 @@ object Round13Ops extends Family {
     "sink_hive_acid_minor_compact" -> ((s, d) => {
       val root = Scratch.opDir("hive_acid_mc", d)
       val rootP = java.nio.file.Paths.get(root)
-      val prevVec = s.conf.getOption("spark.sql.orc.impl")
-      s.conf.set("spark.sql.orc.impl", "hive")
-      try {
+      withConfs(s)("spark.sql.orc.impl" -> "hive") {
         if (!java.nio.file.Files.exists(rootP.resolve("_STAGED"))) {
           val o = Tables.orders(s, d).select(
             col("o_orderkey").cast("bigint").as("k"),
@@ -437,9 +427,6 @@ object Round13Ops extends Family {
             sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally prevVec match {
-        case Some(p) => s.conf.set("spark.sql.orc.impl", p)
-        case None => s.conf.unset("spark.sql.orc.impl")
       }
     }),
 
@@ -484,9 +471,7 @@ object Round13Ops extends Family {
         java.nio.file.Files.writeString(rootP.resolve("_aborted"), "3\n")
         java.nio.file.Files.createFile(rootP.resolve("_STAGED"))
       }
-      val prevVec = s.conf.getOption("spark.sql.orc.impl")
-      s.conf.set("spark.sql.orc.impl", "hive")
-      try {
+      withConfs(s)("spark.sql.orc.impl" -> "hive") {
         val aborted = java.nio.file.Files.readAllLines(rootP.resolve("_aborted"))
           .asScala.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet
         val DeltaRe = """delta_(\d+)_(\d+)""".r
@@ -513,9 +498,6 @@ object Round13Ops extends Family {
             sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
           .orderBy("o_orderstatus")
           .localCheckpoint()
-      } finally prevVec match {
-        case Some(p) => s.conf.set("spark.sql.orc.impl", p)
-        case None => s.conf.unset("spark.sql.orc.impl")
       }
     }),
 
@@ -656,8 +638,6 @@ object Round13Ops extends Family {
     // standardized forms, the lexicographically-first standardized name
     // (the join key the downstream identity graph would use).
     "fn_name_standardize" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "graft_nfd",
-        exprs => UnicodeNormalize(exprs(0), "NFD"))
       val jose = "jose\u0301 GARCIA jr." // decomposed e + combining acute
       val anna = "Ana Mu\u0308ller"       // combining diaeresis
       Tables.customer(s, d)

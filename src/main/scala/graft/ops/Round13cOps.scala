@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.Tables
 
 /** Round-13 operators, third compilation unit (waves 24+) — same paired
@@ -522,9 +521,6 @@ object Round13cOps extends Family {
     // transpositions were planted. DuckDB's damerau_levenshtein has the
     // identical true-DL semantics ("CA"→"ABC" = 2) — the oracle twin.
     "fn_damerau_edit_eval" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "graft_damerau", exprs =>
-          org.apache.spark.sql.graftbridge.DamerauLevenshtein(exprs(0), exprs(1)))
       Tables.customer(s, d)
         .select(col("c_custkey"),
           expr("substring(md5(concat('dl:', CAST(c_custkey AS STRING))), 1, 16)")
@@ -570,9 +566,6 @@ object Round13cOps extends Family {
     // class is provably unmatchable at ≤ 1. Per class: exact/fuzzy/
     // unmatched + lev_missed.
     "join_entity_resolution_dl" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "graft_damerau", exprs =>
-          org.apache.spark.sql.graftbridge.DamerauLevenshtein(exprs(0), exprs(1)))
       val master = Tables.customer(s, d)
         .select(expr("concat('p', lpad(CAST(c_custkey AS STRING), 9, '0'), 'xy')")
           .as("m_name"))
@@ -1136,8 +1129,6 @@ object Round13cOps extends Family {
     // the only data-scaled work. phat is carried beside the bound so the
     // small-sample demotion is visible in the graded output.
     "agg_wilson_lower_bound" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "isqrt",
-        exprs => org.apache.spark.sql.graftbridge.IntSqrt(exprs(0)))
       val items = Tables.orders(s, d)
         .groupBy((col("o_orderkey") % 100).as("item"))
         .agg(count(lit(1)).as("n"),

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{CosineSimilarity, GraftBridge}
 import graft.Tables
 
 /** Round-14 operators — same paired impl/oracle style and engine-exactness
@@ -166,8 +165,6 @@ object Round14Ops extends Family {
     // recall baseline (10·n cosines), everything else is O(probes).
     // Rounded sims + id tie-break keep both engines' rankings identical.
     "llm_ann_hnsw" -> ((s, d) => {
-      GraftBridge.registerFunction(s, "cosine_sim",
-        exprs => CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       // max(1, n): the md5 neighbor expr takes `% n` — total on empty input

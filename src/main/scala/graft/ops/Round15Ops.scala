@@ -138,9 +138,6 @@ object Round15Ops extends Family {
     // n·√n assignment + the filtered exact scan, everything downstream is
     // O(probes).
     "llm_ann_filtered" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "cosine_sim", exprs =>
-          org.apache.spark.sql.graftbridge.CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val nTot = e.agg(count(lit(1)).cast("double").as("n_tot"))
@@ -290,9 +287,6 @@ object Round15Ops extends Family {
     // engines' descents identical. Data-scaled work is the exact-scan
     // recall baseline; the search itself is O(probes · beam · degree).
     "llm_ann_hnsw_layered" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "cosine_sim", exprs =>
-          org.apache.spark.sql.graftbridge.CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val n = math.max(1L, e.count())
@@ -2228,9 +2222,6 @@ object Round15Ops extends Family {
     // tie-breaks). The data-scaled work is one linear sketch pass + the
     // exact-scan recall baseline. Graded per probe: hits, recall ppm.
     "llm_embed_binary_sketch" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "cosine_sim", exprs =>
-          org.apache.spark.sql.graftbridge.CosineSimilarity(exprs(0), exprs(1)))
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
         .withColumn("lo", expr(

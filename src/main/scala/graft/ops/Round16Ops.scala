@@ -37,9 +37,6 @@ object Round16Ops extends Family {
     // is probes × 4 cells, only the index build and the recall baseline
     // scan the corpus — the IVF law at any scale.
     "llm_ann_index_delete" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "graft_ldot", exprs =>
-          org.apache.spark.sql.graftbridge.LongDotProduct(exprs(0), exprs(1)))
       def dot(a: String, b: String) = s"graft_ldot($a, $b)"
       val vecs = Tables.embeddings(s, d).select(col("vec_id"),
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 10000) AS BIGINT))")
@@ -142,8 +139,6 @@ object Round16Ops extends Family {
     // the root; the oracle mirrors with CASE-corrected FLOOR(SQRT).
     // Linear projection + rollup.
     "agg_wilson_ci" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "isqrt", exprs => org.apache.spark.sql.graftbridge.IntSqrt(exprs(0)))
       Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 3).cast("int"))
@@ -496,8 +491,6 @@ object Round16Ops extends Family {
     // class: parts, ss/rop masses, max ss — the wave spec asserts ss
     // grows with the planted demand spread. Projection + two rollups.
     "agg_safety_stock" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "isqrt", exprs => org.apache.spark.sql.graftbridge.IntSqrt(exprs(0)))
       val per = Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("p"))
         .withColumn("cls", (col("p") % 5).cast("int"))
@@ -1068,8 +1061,6 @@ object Round16Ops extends Family {
     // planted-class × region confusion census — the wave spec asserts
     // diagonal dominance (the map actually separates the plants).
     "llm_dataset_cartography" -> ((s, d) => {
-      org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(s,
-        "isqrt", exprs => org.apache.spark.sql.graftbridge.IntSqrt(exprs(0)))
       val per = Tables.documents(s, d)
         .select(col("doc_id").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 3).cast("int"))

@@ -1171,17 +1171,11 @@ object StreamingOps extends Family {
 
   private def withFewShufflePartitions[T](s: SparkSession,
       noDataBatches: Boolean = false)(body: => T): T = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    val prevCodegen = s.conf.getOption("spark.sql.codegen.wholeStage")
-    val prevFmtVal = s.conf.getOption("spark.sql.streaming.stateStore.formatValidation.enabled")
-    val prevRetain = s.conf.getOption("spark.sql.streaming.minBatchesToRetain")
-    val prevSnap = s.conf.getOption("spark.sql.streaming.stateStore.minDeltasForSnapshot")
     // 1, not 2: every state store is per (operator, partition, batch) —
     // commit files, maintenance, snapshot churn all scale with it, and
     // the fixture's keys fit one partition. Results are partition-count
     // invariant; a cluster deployment raises this with key cardinality.
-    s.conf.set("spark.sql.shuffle.partitions", "1")
+    val parts = Seq("spark.sql.shuffle.partitions" -> "1")
     // No-data micro-batches exist to flush state when the source goes
     // quiet; every fixture here ratchets the watermark with a real DATA
     // wave instead, so the trailing empty batch per trigger is pure
@@ -1194,9 +1188,9 @@ object StreamingOps extends Family {
     // the four fixtures whose FINAL eviction has no later data wave to
     // ride (watermark_late, dedup_watermark, union_watermark,
     // stateful_timers) opt back in via noDataBatches = true
-    if (!noDataBatches)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    val noData =
+      if (noDataBatches) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     // Remaining per-batch fixed costs, all safe to shed on golden
     // fixtures (and mostly the RIGHT call on a real cluster too):
     // format validation re-verifies every state row's schema per batch
@@ -1205,21 +1199,12 @@ object StreamingOps extends Family {
     // from an old offset; a huge snapshot threshold stops the store
     // from compacting delta files mid-fixture (3-batch lifetimes never
     // amortize a snapshot).
-    s.conf.set("spark.sql.streaming.stateStore.formatValidation.enabled", "false")
-    s.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    s.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", "1000")
-    def restore(key: String, prev: Option[String]): Unit = prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      restore("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      restore("spark.sql.codegen.wholeStage", prevCodegen)
-      restore("spark.sql.streaming.stateStore.formatValidation.enabled", prevFmtVal)
-      restore("spark.sql.streaming.minBatchesToRetain", prevRetain)
-      restore("spark.sql.streaming.stateStore.minDeltasForSnapshot", prevSnap)
-    }
+    val confs = parts ++ noData ++ Seq(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.streaming.stateStore.formatValidation.enabled" -> "false",
+      "spark.sql.streaming.minBatchesToRetain" -> "1",
+      "spark.sql.streaming.stateStore.minDeltasForSnapshot" -> "1000")
+    withConfs(s)(confs: _*)(body)
   }
 
   /** transformWithState requires the RocksDB state store provider (state
@@ -1227,16 +1212,9 @@ object StreamingOps extends Family {
     * state; the default HDFS-backed store keeps every key in executor
     * heap). Scoped set/restore: the conf is read at query START, so
     * restoring after stop() leaves concurrent ops unaffected. */
-  private def withRocksDBStateStore[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
+  private def withRocksDBStateStore[T](s: SparkSession)(body: => T): T =
+    withConfs(s)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   val oracles: Map[String, String] = unique(
     // The three pure-streaming ops consume a FIXED MemoryStream input, so

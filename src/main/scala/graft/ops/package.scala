@@ -37,6 +37,22 @@ package object ops {
   private[graft] def duckMd5Bits(ns: String, id: String, hex: Int): String =
     duckMd5Bits(s"'$ns:' || CAST($id AS VARCHAR)", hex)
 
+  /** Runs `body` with the session confs `kv` set, then puts back the exact
+    * state from before the call: a key absent from `s.conf.getAll` is
+    * unset again (not set to its default), any other key gets its old
+    * value. A conf that is read when a query runs must be consumed inside
+    * `body` (e.g. a `localCheckpoint()`), not by a later action. */
+  private[graft] def withConfs[T](s: SparkSession)(kv: (String, String)*)(body: => T): T = {
+    val before = s.conf.getAll
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally kv.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => s.conf.set(k, v)
+        case None => s.conf.unset(k)
+      }
+    }
+  }
+
   private def checkDraw(hex: Int, from: Int): Unit = {
     require(hex >= 1 && hex <= 15, s"an md5 draw takes 1 to 15 hex digits to fit a BIGINT, not $hex")
     require(from >= 1 && from + hex - 1 <= 32,

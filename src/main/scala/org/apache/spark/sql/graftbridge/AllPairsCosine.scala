@@ -164,10 +164,10 @@ object AllPairsCosineStrategy extends SparkStrategy {
 }
 
 object AllPairsCosineApi {
-  /** Install the strategy (idempotent) and sweep `vectors` — shaped
-    * (id: Long, emb: Array[Double]) — for pairs with cos ≥ threshold. */
+  /** Sweep `vectors` — shaped (id: Long, emb: Array[Double]) — for pairs
+    * with cos ≥ threshold. */
   def pairs(spark: SparkSession, vectors: DataFrame, threshold: Double): DataFrame =
-    GraftBridge.planNative(spark, AllPairsCosineStrategy, Seq(vectors)) {
+    GraftBridge.planNative(spark, Seq(vectors)) {
       case Seq(v) => AllPairsCosine(v, threshold, AllPairsCosine.freshOutput())
     }
 }

@@ -120,10 +120,9 @@ object AsOfJoinStrategy extends SparkStrategy {
 }
 
 object AsOfJoinApi {
-  /** Install the strategy (idempotent) and join `probes asof corpus`, both
-    * shaped (id: Long, key: Long, ts: Long). */
+  /** `probes asof corpus`, both shaped (id: Long, key: Long, ts: Long). */
   def asof(spark: SparkSession, leftDf: DataFrame, rightDf: DataFrame): DataFrame =
-    GraftBridge.planNative(spark, AsOfJoinStrategy, Seq(leftDf, rightDf)) {
+    GraftBridge.planNative(spark, Seq(leftDf, rightDf)) {
       case Seq(l, r) => AsOfJoin(l, r, AsOfJoin.freshOutput())
     }
 }

@@ -169,13 +169,11 @@ object CosineTopKStrategy extends SparkStrategy {
 }
 
 object CosineTopKApi {
-  /** Install the strategy (idempotent) and build a DataFrame over the
-    * native operator. Uses `spark.experimental.extraStrategies`, the public
-    * post-hoc registration point for planner strategies — the harness owns
-    * session construction, so `SparkSessionExtensions` is not available. */
+  /** A DataFrame over the native operator (planned by `CosineTopKStrategy`,
+    * which `graft.GraftExtensions` installs on every session). */
   def topK(spark: SparkSession, probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"topK: k must be positive, got $k")
-    GraftBridge.planNative(spark, CosineTopKStrategy, Seq(probes, corpus)) {
+    GraftBridge.planNative(spark, Seq(probes, corpus)) {
       case Seq(p, c) => CosineTopK(p, c, k, CosineTopK.freshOutput())
     }
   }

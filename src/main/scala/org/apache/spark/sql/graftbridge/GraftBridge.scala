@@ -1,46 +1,22 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Thin bridge into Spark's session-local FunctionRegistry (private[sql]) so
-  * graft can register native Catalyst expressions (e.g.
-  * graft.functions.CosineSimilarity) on a session it did not build.
-  *
-  * The public alternative — SparkSessionExtensions.injectFunction — only
-  * works when the extension is configured before the session is created; the
-  * driver harness owns session construction (Verify.scala/Bench.scala), so a
-  * post-hoc registration hook is required. This file deliberately lives under
-  * org.apache.spark.sql to gain private[sql] access; it touches no internal
-  * state other than the documented FunctionRegistry.
+/** Thin bridge to Spark's `private[sql]` `Dataset.ofRows`, so the native
+  * whole-operator APIs (as-of join, cosine top-k, all-pairs sweep) can
+  * wrap their logical nodes in a DataFrame. It lives under
+  * org.apache.spark.sql for that access only. The strategies that plan
+  * those nodes, like the native functions, are installed on every session
+  * when it is built, by `graft.GraftExtensions`.
   */
 object GraftBridge {
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit = {
+  /** Wrap the node built from the children's ALREADY-analyzed plans
+    * (re-running the analyzer on an analyzed plan is wasted work) in a
+    * DataFrame. */
+  def planNative(spark: SparkSession, children: Seq[DataFrame])(
+      build: Seq[LogicalPlan] => LogicalPlan): DataFrame = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
-
-  /** Shared plumbing for the native whole-operator APIs (as-of join,
-    * cosine top-k, all-pairs sweep): install the strategy once (idempotent
-    * — `experimental.extraStrategies` is the public post-hoc registration
-    * point, since the harness owns session construction) and wrap the
-    * node built from the children's ALREADY-analyzed plans (re-running the
-    * analyzer on an analyzed plan is wasted work) in a DataFrame. */
-  def planNative(
-      spark: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy,
-      children: Seq[org.apache.spark.sql.DataFrame])(
-      build: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =>
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraStrategies.contains(strategy)) {
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ strategy
-    }
     org.apache.spark.sql.classic.Dataset.ofRows(
       classic, build(children.map(_.queryExecution.analyzed)))
   }

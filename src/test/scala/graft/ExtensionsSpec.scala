@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{CosineSimilarity, GraftBridge}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** §2.9 extension points: the native cosine expression (vs a plain-Scala
@@ -18,8 +17,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkFixture {
   }
 
   private def sparkCosine(pairs: Seq[(Seq[Double], Seq[Double])]): Seq[Double] = {
-    GraftBridge.registerFunction(spark, "cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
     import scala.jdk.CollectionConverters._
     val df = spark.createDataFrame(
       pairs.map { case (a, b) => org.apache.spark.sql.Row(a, b) }.asJava,

@@ -10,9 +10,27 @@ class OperatorSmokeSpec extends AnyFunSuite with SparkFixture {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs and returns rows at sf0.001") {
+      val before = SessionState.of(spark)
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows")
+      val after = SessionState.of(spark)
+      val left = before.changedNames(after) -- mayLeave(name)
+      assert(left.isEmpty, s"$name left session state behind: ${left.toSeq.sorted.mkString(", ")}")
+      assert(after.strategies == before.strategies,
+        s"$name changed the planner strategies: ${before.strategies} -> ${after.strategies}")
     }
+  }
+
+  /** The function or conf names an operator may leave behind, and why:
+    * `udf_scalar` and `udf_sql` demonstrate registering a UDF in the
+    * caller's session; the first `service_*` operator starts the JVM's
+    * one thrift server, which reads its port and host from the session. */
+  private def mayLeave(name: String): Set[String] = name match {
+    case "udf_scalar" => Set("rev_words")
+    case "udf_sql" => Set("graft_taxed", "graft_size_band")
+    case n if n.startsWith("service_") =>
+      Set("hive.server2.thrift.port", "hive.server2.thrift.bind.host", "hive.server2.webui.port")
+    case _ => Set.empty
   }
 
   test("entry() returns rows (t1 smoke)") {
@@ -88,5 +106,28 @@ class OperatorSmokeSpec extends AnyFunSuite with SparkFixture {
     assert(byProbe.size == 10)
     assert(byProbe.values.forall(_.length == 5))
     assert(byProbe.values.forall(_.map(_.getInt(3)).sorted.toSeq == Seq(1, 2, 3, 4, 5)))
+  }
+}
+
+/** What an operator call could change in the caller's session: each
+  * registered function (by the class that builds it, so a replaced
+  * function shows too), the planner's strategies, and the session confs. */
+private case class SessionState(
+    functions: Map[String, String], strategies: Seq[String], confs: Map[String, String]) {
+  def changedNames(after: SessionState): Set[String] = {
+    def changed(a: Map[String, String], b: Map[String, String]) =
+      (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k))
+    changed(functions, after.functions) ++ changed(confs, after.confs)
+  }
+}
+
+private object SessionState {
+  def of(spark: org.apache.spark.sql.SparkSession): SessionState = {
+    val st = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val reg = st.functionRegistry
+    SessionState(
+      reg.listFunction().map(f => f.unquotedString -> reg.lookupFunction(f).map(_.getClassName).orNull).toMap,
+      st.planner.strategies.map(_.getClass.getName),
+      spark.conf.getAll)
   }
 }

@@ -111,14 +111,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   test("join_skew_aqe fires OptimizeSkewedJoin at runtime (skew=true in the adaptive plan)") {
     // the automatic twin of join_skew_salted: same skew, zero plan-time
     // intervention — AQE must detect the hot partition and split it
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getAll.get(key)
     graft.ops.Relational.withSkewAqeConfs(spark) {
       val df = graft.ops.Relational.skewAqeFrame(spark, sf)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"), p.take(4000))
     }
-    // and no skew-regime conf leaked out of the scope
-    assert(spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "default") != "1024")
+    // and no skew-regime conf leaked out of the scope: an unset key is unset again
+    assert(spark.conf.getAll.get(key) == before)
   }
 
   test("sink_partitioned prunes to the o_year=1997 partition at scan time") {
@@ -149,8 +151,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // the declarative pure-theta self-join (the old graded formulation,
     // demoted here: it plans a BroadcastNestedLoopJoin over the corpus
     // square) is the independent cross-check the native sweep must equal
-    org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(spark, "dot_product",
-      exprs => org.apache.spark.sql.graftbridge.DotProduct(exprs(0), exprs(1)))
     val e = graft.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", fsqrt(call_function("dot_product", col("emb"), col("emb"))))

@@ -3,7 +3,6 @@ package graft
 import graft.ops.{duckMd5Bits, md5Bits}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{DotProduct, GraftBridge}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,8 +22,6 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
   test("DotProduct equals the plain-Scala fold for generated vectors") {
     val vec = Gen.listOfN(16, Gen.choose(-10.0, 10.0))
     val pairs = sample(Gen.zip(vec, vec), 40)
-    GraftBridge.registerFunction(spark, "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)))
     import scala.jdk.CollectionConverters._
     val df = spark.createDataFrame(
       pairs.map { case (a, b) => Row(a, b) }.asJava,

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round9Wave12Spec extends AnyFunSuite with SparkFixture {
 
   test("join_aqe_bhj_switch: runtime stats rewrite the sort-merge join to broadcast") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getAll.get(key)
     graft.ops.Relational.withBhjSwitchConfs(spark) {
       val df = graft.ops.Relational.aqeBhjFrame(spark, sf)
       df.collect()
@@ -18,8 +20,8 @@ class Round9Wave12Spec extends AnyFunSuite with SparkFixture {
       assert(p.contains("BroadcastHashJoin"),
         s"AQE did not switch to broadcast:\n${p.take(4000)}")
     }
-    // no conf leaked out of the scope
-    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "default") != "-1")
+    // no conf leaked out of the scope: an unset key is unset again
+    assert(spark.conf.getAll.get(key) == before)
   }
 
   test("llm_cdc_chunk: chunks tile each doc exactly and agree with the boundary law") {

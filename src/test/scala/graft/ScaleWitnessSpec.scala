@@ -130,10 +130,6 @@ class ScaleWitnessSpec extends AnyFunSuite {
     val s = SparkSession.builder()
       .master("local[16]")
       .appName("graft-scale-witness")
-      // the shared-JVM session race: whichever suite builds the root session
-      // first must carry the build-time extensions, or GraftExtensionsSpec's
-      // config-driven assertions (and the native-function specs) lose them
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "16")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -376,13 +372,10 @@ class ScaleWitnessSpec extends AnyFunSuite {
     val big = dirs(2)
     // SRP-LSH over 10^5 vectors: 8 bands × 16 bits → 2^16 values per band,
     // E[bucket] = n/65536 ≈ 1.5; the witness bound is 4× that
-    org.apache.spark.sql.graftbridge.GraftBridge.registerFunction(spark, "srp_bands",
-      exprs => org.apache.spark.sql.graftbridge.SrpBands(
-        exprs(0), graft.ops.LlmScale.srpPlanes(128), 16))
     val banded = Tables.embeddings(spark, big)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .select(col("vec_id"),
-        posexplode(call_function("srp_bands", col("emb"))).as(Seq("bidx", "bval")))
+        posexplode(expr("srp_bands(emb, 128, 16)")).as(Seq("bidx", "bval")))
     val occ = banded.groupBy("bidx", "bval").agg(count(lit(1)).as("n"))
       .agg(sum("n").cast("double").as("rows"), count(lit(1)).cast("double").as("buckets"),
         max("n").cast("double").as("maxb")).collect()(0)

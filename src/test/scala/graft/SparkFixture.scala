@@ -5,16 +5,14 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
 /** Shared local session: the engine's own `Sessions.builder` (Hive catalog
-  * on embedded Derby, UTC, UI off) at local[4] with 4 shuffle partitions,
-  * plus the config-driven `GraftExtensions` path, which GraftExtensionsSpec
-  * asserts on a clean child session. One JVM-wide session keeps the whole
-  * test run fast.
+  * on embedded Derby, UTC, UI off) at local[4] with 4 shuffle partitions;
+  * `GraftExtensions` reaches it through service loading, as it reaches
+  * every session. One JVM-wide session keeps the whole test run fast.
   */
 object SparkFixture {
   lazy val spark: SparkSession = {
     val s = Sessions.builder("4")
       .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
