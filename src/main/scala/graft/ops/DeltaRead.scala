@@ -28,10 +28,8 @@ import graft.Tables
   */
 object DeltaRead extends Family {
   /** Builds the fixture table once per (JVM, sf); returns its root. */
-  private[graft] def ensureTable(s: SparkSession, d: String): String = {
-    val root = Scratch.opDir("delta_read", d)
-    val done = Paths.get(root, "_BUILT")
-    if (!Files.exists(done)) {
+  private[graft] def ensureTable(s: SparkSession, d: String): String =
+    Scratch.staged("delta_read", d) { root =>
       Files.createDirectories(Paths.get(root, "data"))
       Files.createDirectories(Paths.get(root, "_delta_log"))
       def writeClass(m: Int, name: String): Unit = {
@@ -57,10 +55,7 @@ object DeltaRead extends Family {
         c0.mkString("\n").getBytes(StandardCharsets.UTF_8))
       Files.write(Paths.get(root, "_delta_log", f"${1L}%020d.json"),
         c1.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      Files.write(done, Array.emptyByteArray)
     }
-    root
-  }
 
   /** Live data files after folding commits 0..version (None = head). */
   private[graft] def liveFiles(root: String, version: Option[Long]): Seq[String] = {

@@ -129,10 +129,10 @@ object IcebergRead extends Family {
 
   /** Same fixture at a caller-chosen root — the write-side op appends to
     * its OWN copy so the read op's current-snapshot assertion stays true. */
-  private[graft] def ensureTableAt(s: SparkSession, d: String, name: String): String = {
-    val root = Scratch.opDir(name, d)
-    val done = Paths.get(root, "_DONE")
-    if (Files.exists(done)) return root
+  private[graft] def ensureTableAt(s: SparkSession, d: String, name: String): String =
+    Scratch.staged(name, d)(writeTable(s, d, _))
+
+  private def writeTable(s: SparkSession, d: String, root: String): Unit = {
     Files.createDirectories(Paths.get(root, "metadata"))
     val o = Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
     val (fa, na) = writeDataFile(s, o.where(col("o_orderkey") % 3 === 0), root, "A")
@@ -173,8 +173,6 @@ object IcebergRead extends Family {
          |   "manifest-list":"$ml2","summary":{"operation":"overwrite"}}]}""".stripMargin
     Files.write(Paths.get(root, "metadata", "v2.metadata.json"),
       meta.getBytes(StandardCharsets.UTF_8))
-    Files.createFile(done)
-    root
   }
 
   /** THE READER: metadata JSON → snapshot → manifest list → manifests →

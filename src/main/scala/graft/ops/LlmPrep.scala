@@ -1223,10 +1223,7 @@ object LlmPrep extends Family {
     // counts bytes per detected modality. Oracle replays the generator
     // rule (doc_id mod 3 picks the header) arithmetically.
     "mm_magic_sniff" -> ((s, d) => {
-      val dir = Scratch.opDir("magicsniff", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("magicsniff", d) { dir =>
         val png = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
         val jpg = Array(0xFF, 0xD8, 0xFF).map(_.toByte)
         val wav = "RIFF".getBytes("UTF-8") ++ Array[Byte](0, 0, 0, 0) ++
@@ -1241,7 +1238,6 @@ object LlmPrep extends Family {
               java.nio.file.Paths.get(dir, f"blob_${r.getLong(0)}%08d.bin"),
               header ++ r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(dir)
         .select(col("length"),

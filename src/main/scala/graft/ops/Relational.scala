@@ -176,15 +176,11 @@ object Relational extends Family {
     // partition column — silently inventing one is the failure mode
     // this option exists to prevent.
     "source_recursive_lookup" -> ((s, d) => {
-      val dir = Scratch.opDir("recdirs", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("recdirs", d) { dir =>
         Seq(1995, 1996).foreach { y =>
           Tables.orders(s, d).where(year(col("o_orderdate")) === y)
             .write.mode("overwrite").parquet(s"$dir/y$y/batch")
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.option("recursiveFileLookup", "true").parquet(dir)
         .groupBy("o_orderpriority")
@@ -205,15 +201,11 @@ object Relational extends Family {
     // the physical plan carries the PartitionFilters; the oracle
     // replays the rollup straight off orders.
     "source_hive_partition_infer" -> ((s, d) => {
-      val dir = Scratch.opDir("hivepart", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("hivepart", d) { dir =>
         (1995 to 1998).foreach { y =>
           Tables.orders(s, d).where(year(col("o_orderdate")) === y)
             .write.mode("overwrite").parquet(s"$dir/o_year=$y")
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.option("basePath", dir).parquet((1995 to 1998).map(y => s"$dir/o_year=$y"): _*)
         .where(col("o_year") >= 1996)
@@ -236,10 +228,7 @@ object Relational extends Family {
     // recovered from the file path. pathGlobFilter prunes non-matching
     // files at LISTING time, before any read.
     "source_binary_files" -> ((s, d) => {
-      val dir = Scratch.opDir("binfiles", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("binfiles", d) { dir =>
         Tables.documents(s, d).where(col("doc_id") % 50 === 0)
           .select(col("doc_id"), col("text")).collect()
           .foreach { r =>
@@ -247,7 +236,6 @@ object Relational extends Family {
               java.nio.file.Paths.get(dir, f"doc_${r.getLong(0)}%08d.bin"),
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(dir)
         .select(
@@ -268,10 +256,7 @@ object Relational extends Family {
     // rollup after the decode is ordinary codegen'd relational algebra.
     // Oracle = the same rollup straight off the parquet subset.
     "source_avro_ingest" -> ((s, d) => {
-      val dir = Scratch.opDir("avroingest", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("avroingest", d) { dir =>
         val schema = new org.apache.avro.Schema.Parser().parse(
           """{"type":"record","name":"order_msg","fields":[
             |{"name":"okey","type":"long"},{"name":"status","type":"string"},
@@ -293,7 +278,6 @@ object Relational extends Family {
           }
           w.close()
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       import s.implicits._
       s.read.format("binaryFile").option("pathGlobFilter", "*.avro").load(dir)
@@ -327,10 +311,7 @@ object Relational extends Family {
     // the codec path is lossless. (Non-splittable gz = one task per
     // shard — stage several shards for parallelism, as a crawl does.)
     "source_text_gzip" -> ((s, d) => {
-      val dir = Scratch.opDir("textgz", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("textgz", d) { dir =>
         val rows = Tables.orders(s, d).where(col("o_orderkey") % 7 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             round(col("o_totalprice") * 100).cast("bigint")).collect()
@@ -344,7 +325,6 @@ object Relational extends Family {
           }
           out.close()
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.option("pathGlobFilter", "*.gz").text(dir)
         .select(split(col("value"), "\t").as("f"))
@@ -365,10 +345,7 @@ object Relational extends Family {
     // relational source — a parser bug of even one column shifts a digit
     // and the cents sum catches it.
     "source_fixed_width" -> ((s, d) => {
-      val dir = Scratch.opDir("fixedwidth", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("fixedwidth", d) { dir =>
         val rows = Tables.orders(s, d).where(col("o_orderkey") % 11 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             round(col("o_totalprice") * 100).cast("bigint")).collect()
@@ -378,7 +355,6 @@ object Relational extends Family {
         }
         java.nio.file.Files.write(java.nio.file.Paths.get(dir, "records.dat"),
           sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.option("pathGlobFilter", "*.dat").text(dir)
         .select(
@@ -397,10 +373,7 @@ object Relational extends Family {
     // as exactly one row, identity proven by md5 + length against the
     // source column; the file key recovered from input_file_name().
     "source_wholetext" -> ((s, d) => {
-      val dir = Scratch.opDir("wholetext", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("wholetext", d) { dir =>
         Tables.documents(s, d).where(col("doc_id") % 75 === 0)
           .select(col("doc_id"), col("text")).collect()
           .foreach { r =>
@@ -408,7 +381,6 @@ object Relational extends Family {
               java.nio.file.Paths.get(dir, f"doc_${r.getLong(0)}%08d.txt"),
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       s.read.option("wholetext", "true")
         .option("pathGlobFilter", "*.txt").text(dir)
@@ -433,10 +405,8 @@ object Relational extends Family {
         .select(col("o_orderkey"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
       codecs.map { c =>
-        val dir = s"${Scratch.dir}/codec_$c"
-        if (!new java.io.File(dir).exists()) {
-          base.write.mode("overwrite").option("compression", c).parquet(dir)
-        }
+        val dir = Scratch.opDir(s"codec_$c", d)
+        base.write.mode("overwrite").option("compression", c).parquet(dir)
         s.read.parquet(dir)
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
             min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
@@ -483,15 +453,12 @@ object Relational extends Family {
     // equal the relational replay — encodings are a storage detail, never
     // a semantic one.
     "source_parquet_v2_roundtrip" -> ((s, d) => {
-      val dir = Scratch.opDir("pq_v2", d)
-      val marker = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(marker)) {
+      val dir = Scratch.staged("pq_v2", d) { dir =>
         Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
           .orderBy("o_orderkey").coalesce(1)
           .write.mode("overwrite")
           .option("parquet.writer.version", "PARQUET_2_0")
           .parquet(dir)
-        java.nio.file.Files.createFile(marker)
       }
       val part = new java.io.File(dir).listFiles()
         .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
@@ -551,13 +518,10 @@ object Relational extends Family {
     // the parsed rollup must equal the relational replay — a wrong sniff
     // collapses columns and is caught by the oracle.
     "source_csv_dialect_sniff" -> ((s, d) => {
-      val dir = Scratch.opDir("csv_sniff", d)
-      val marker = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(marker)) {
+      val dir = Scratch.staged("csv_sniff", d) { dir =>
         Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").option("sep", ";").option("header", "true")
           .csv(dir)
-        java.nio.file.Files.createFile(marker)
       }
       val counts = s.read.text(dir)
         .agg(
@@ -587,12 +551,9 @@ object Relational extends Family {
     // file counts ride along: at 100 TB this is how a reader audits
     // partition layout without trusting the catalog.
     "source_metadata_columns" -> ((s, d) => {
-      val dir = Scratch.opDir("meta_cols", d)
-      val marker = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(marker)) {
+      val dir = Scratch.staged("meta_cols", d) { dir =>
         Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
           .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
-        java.nio.file.Files.createFile(marker)
       }
       s.read.parquet(dir)
         .select(col("o_orderstatus"),
@@ -621,9 +582,7 @@ object Relational extends Family {
     // runs per file in the manifest scan; data bytes of pruned groups are
     // never read.
     "source_parquet_rowgroup_prune" -> ((s, d) => {
-      val dir = Scratch.opDir("rg_prune", d)
-      val marker = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(marker)) {
+      val dir = Scratch.staged("rg_prune", d) { dir =>
         Tables.orders(s, d).select("o_orderkey", "o_totalprice")
           .orderBy("o_orderkey").coalesce(1)
           .write.mode("overwrite")
@@ -632,7 +591,6 @@ object Relational extends Family {
           .option("parquet.block.size", 8192)
           .option("parquet.page.size", 2048)
           .parquet(dir)
-        java.nio.file.Files.createFile(marker)
       }
       val part = new java.io.File(dir).listFiles()
         .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head

@@ -72,19 +72,15 @@ object Round11Ops extends Family {
     // stats, same numbers). Oracle recomputes both layouts' bucket
     // min/max arithmetically from orders.
     "warehouse_clustering_depth" -> ((s, d) => {
-      val dir = Scratch.opDir("clusdepth", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      val o = Tables.orders(s, d).select(col("o_orderkey"))
-      val mx = o.agg(max("o_orderkey")).collect()(0).getLong(0)
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("clusdepth", d) { dir =>
+        val o = Tables.orders(s, d).select(col("o_orderkey"))
+        val mx = o.agg(max("o_orderkey")).collect()(0).getLong(0)
         (0 to 7).foreach { b =>
           o.where(col("o_orderkey") % 8 === b)
             .write.mode("overwrite").parquet(s"$dir/mod/f$b")
           o.where(expr(s"least(o_orderkey * 8 DIV ${mx + 1}, 7)") === b)
             .write.mode("overwrite").parquet(s"$dir/range/f$b")
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       def stats(sub: String, label: String) =
         s.read.parquet((0 to 7).map(b => s"$dir/$sub/f$b"): _*)

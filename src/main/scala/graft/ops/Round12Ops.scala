@@ -122,23 +122,11 @@ object Round12Ops extends Family {
     // collected delete set — a delete delta at 100 TB can hold 10⁹
     // ids). Oracle replays the delete predicates over the source.
     "source_hive_acid_read" -> ((s, d) => {
-      val root = Scratch.opDir("hive_acid", d)
-      val rootP = java.nio.file.Paths.get(root)
-      if (!java.nio.file.Files.exists(rootP.resolve("_STAGED"))) {
-        val o = Tables.orders(s, d).select(
-          col("o_orderkey").cast("bigint").as("k"),
-          col("o_orderstatus"), col("o_totalprice"))
-        def acidify(df: DataFrame, txn: Long) = df.select(
-          lit(0).as("operation"),
-          lit(txn).as("originalTransaction"),
-          (col("k") % 4).cast("int").as("bucket"),
-          col("k").as("rowId"),
-          lit(txn).as("currentTransaction"),
-          struct(col("k").as("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice")).as("row"))
-        acidify(o.where(col("k") % 2 === 0), 1L)
+      val root = Scratch.staged("hive_acid", d) { root =>
+        val o = HiveAcid.orders(s, d)
+        HiveAcid.acidify(o.where(col("k") % 2 === 0), 1L)
           .write.mode("overwrite").orc(s"$root/base_0000001")
-        acidify(o.where(col("k") % 2 === 1), 2L)
+        HiveAcid.acidify(o.where(col("k") % 2 === 1), 2L)
           .write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
         // delete delta: a third transaction removes every 10th base row
         // and every odd multiple of 7 from the insert delta. A delete
@@ -152,8 +140,8 @@ object Round12Ops extends Family {
             col("k").as("rowId"),
             lit(3L).as("currentTransaction"))
           .write.mode("overwrite").orc(s"$root/delete_delta_0000003_0000003")
-        java.nio.file.Files.createFile(rootP.resolve("_STAGED"))
       }
+      val rootP = java.nio.file.Paths.get(root)
       // ---- the reader: directory-grammar listing (driver-side, O(dirs),
       // like any table-format snapshot resolution), then distributed MOR.
       // The native ORC reader recognizes the exact 6-field ACID tuple as
@@ -1652,4 +1640,24 @@ object Round12Ops extends Family {
         |       AND dir <> prev_dir THEN 1 ELSE 0 END) AS BIGINT) AS n_reversals
         |FROM dd GROUP BY event_type ORDER BY event_type""".stripMargin
   )
+}
+
+/** Staging for the Hive-ACID layouts (`source_hive_acid_*`,
+  * `sink_hive_acid_minor_compact`): `orders` keys the source rows by `k`,
+  * and `acidify` puts them in the ACID insert schema, where the synthetic
+  * row identity is (originalTransaction, bucket, rowId) and the payload
+  * rides in the `row` struct. */
+private[ops] object HiveAcid {
+  def orders(s: SparkSession, d: String): DataFrame = Tables.orders(s, d).select(
+    col("o_orderkey").cast("bigint").as("k"),
+    col("o_orderstatus"), col("o_totalprice"))
+
+  def acidify(df: DataFrame, txn: Long): DataFrame = df.select(
+    lit(0).as("operation"),
+    lit(txn).as("originalTransaction"),
+    (col("k") % 4).cast("int").as("bucket"),
+    col("k").as("rowId"),
+    lit(txn).as("currentTransaction"),
+    struct(col("k").as("o_orderkey"), col("o_orderstatus"),
+      col("o_totalprice")).as("row"))
 }

@@ -70,31 +70,19 @@ object Round13Ops extends Family {
     // on the 3-part row identity — O(visible rows), never a collected
     // delete set.
     "source_hive_acid_overlap" -> ((s, d) => {
-      val root = Scratch.opDir("hive_acid_ov", d)
-      val rootP = java.nio.file.Paths.get(root)
-      if (!java.nio.file.Files.exists(rootP.resolve("_STAGED"))) {
-        val o = Tables.orders(s, d).select(
-          col("o_orderkey").cast("bigint").as("k"),
-          col("o_orderstatus"), col("o_totalprice"))
-        def acidify(df: DataFrame, txn: Long) = df.select(
-          lit(0).as("operation"),
-          lit(txn).as("originalTransaction"),
-          (col("k") % 4).cast("int").as("bucket"),
-          col("k").as("rowId"),
-          lit(txn).as("currentTransaction"),
-          struct(col("k").as("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice")).as("row"))
+      val root = Scratch.staged("hive_acid_ov", d) { root =>
+        val o = HiveAcid.orders(s, d)
         // decoys BELOW the compaction watermark: a stale full base with
         // doubled prices and a stale delta — both must be invisible
-        acidify(o.withColumn("o_totalprice", col("o_totalprice") * 2), 1L)
+        HiveAcid.acidify(o.withColumn("o_totalprice", col("o_totalprice") * 2), 1L)
           .write.mode("overwrite").orc(s"$root/base_0000001")
-        acidify(o.where(col("k") % 2 === 1), 2L)
+        HiveAcid.acidify(o.where(col("k") % 2 === 1), 2L)
           .write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
         // the compacted base (even keys) + a post-compaction insert
         // delta (odd keys) the base does not absorb
-        acidify(o.where(col("k") % 2 === 0), 3L)
+        HiveAcid.acidify(o.where(col("k") % 2 === 0), 3L)
           .write.mode("overwrite").orc(s"$root/base_0000003")
-        acidify(o.where(col("k") % 2 === 1), 4L)
+        HiveAcid.acidify(o.where(col("k") % 2 === 1), 4L)
           .write.mode("overwrite").orc(s"$root/delta_0000004_0000004")
         // post-compaction delete delta: kills every k%10==6 base row
         // (originalTransaction 3) and every odd multiple of 9 from the
@@ -106,8 +94,8 @@ object Round13Ops extends Family {
             col("k").as("rowId"),
             lit(5L).as("currentTransaction"))
           .write.mode("overwrite").orc(s"$root/delete_delta_0000005_0000005")
-        java.nio.file.Files.createFile(rootP.resolve("_STAGED"))
       }
+      val rootP = java.nio.file.Paths.get(root)
       // the native ORC reader remaps the 6-field ACID tuple (see
       // source_hive_acid_read); Hive's path is pinned for the scans
       withConfs(s)("spark.sql.orc.impl" -> "hive") {
@@ -368,26 +356,14 @@ object Round13Ops extends Family {
     // asserts the directory census (merged span present, originals
     // gone).
     "sink_hive_acid_minor_compact" -> ((s, d) => {
-      val root = Scratch.opDir("hive_acid_mc", d)
-      val rootP = java.nio.file.Paths.get(root)
       withConfs(s)("spark.sql.orc.impl" -> "hive") {
-        if (!java.nio.file.Files.exists(rootP.resolve("_STAGED"))) {
-          val o = Tables.orders(s, d).select(
-            col("o_orderkey").cast("bigint").as("k"),
-            col("o_orderstatus"), col("o_totalprice"))
-          def acidify(df: DataFrame, txn: Long) = df.select(
-            lit(0).as("operation"),
-            lit(txn).as("originalTransaction"),
-            (col("k") % 4).cast("int").as("bucket"),
-            col("k").as("rowId"),
-            lit(txn).as("currentTransaction"),
-            struct(col("k").as("o_orderkey"), col("o_orderstatus"),
-              col("o_totalprice")).as("row"))
-          acidify(o.where(col("k") % 2 === 0), 1L)
+        val root = Scratch.staged("hive_acid_mc", d) { root =>
+          val o = HiveAcid.orders(s, d)
+          HiveAcid.acidify(o.where(col("k") % 2 === 0), 1L)
             .write.mode("overwrite").orc(s"$root/base_0000001")
-          acidify(o.where(col("k") % 4 === 1), 2L)
+          HiveAcid.acidify(o.where(col("k") % 4 === 1), 2L)
             .write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
-          acidify(o.where(col("k") % 4 === 3), 3L)
+          HiveAcid.acidify(o.where(col("k") % 4 === 3), 3L)
             .write.mode("overwrite").orc(s"$root/delta_0000003_0000003")
           // delete delta targets DELTA rows only (k%14==1 is always odd):
           // identity preservation across the merge is the graded law
@@ -398,8 +374,8 @@ object Round13Ops extends Family {
               col("k").as("rowId"),
               lit(4L).as("currentTransaction"))
             .write.mode("overwrite").orc(s"$root/delete_delta_0000004_0000004")
-          java.nio.file.Files.createFile(rootP.resolve("_STAGED"))
         }
+        val rootP = java.nio.file.Paths.get(root)
         if (!java.nio.file.Files.exists(rootP.resolve("_MINOR_COMPACTED"))) {
           // the minor compaction: insert deltas 2..3 → one merged delta,
           // identities untouched, originals removed
@@ -440,26 +416,14 @@ object Round13Ops extends Family {
     // reader that unions every delta double-counts half the table).
     // Committed delete deltas still apply.
     "source_hive_acid_aborted" -> ((s, d) => {
-      val root = Scratch.opDir("hive_acid_ab", d)
-      val rootP = java.nio.file.Paths.get(root)
-      if (!java.nio.file.Files.exists(rootP.resolve("_STAGED"))) {
-        val o = Tables.orders(s, d).select(
-          col("o_orderkey").cast("bigint").as("k"),
-          col("o_orderstatus"), col("o_totalprice"))
-        def acidify(df: DataFrame, txn: Long) = df.select(
-          lit(0).as("operation"),
-          lit(txn).as("originalTransaction"),
-          (col("k") % 4).cast("int").as("bucket"),
-          col("k").as("rowId"),
-          lit(txn).as("currentTransaction"),
-          struct(col("k").as("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice")).as("row"))
-        acidify(o.where(col("k") % 2 === 0), 1L)
+      val root = Scratch.staged("hive_acid_ab", d) { root =>
+        val o = HiveAcid.orders(s, d)
+        HiveAcid.acidify(o.where(col("k") % 2 === 0), 1L)
           .write.mode("overwrite").orc(s"$root/base_0000001")
-        acidify(o.where(col("k") % 2 === 1), 2L)
+        HiveAcid.acidify(o.where(col("k") % 2 === 1), 2L)
           .write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
         // the ABORTED writer's files: even keys again, doubled prices
-        acidify(o.where(col("k") % 2 === 0)
+        HiveAcid.acidify(o.where(col("k") % 2 === 0)
           .withColumn("o_totalprice", col("o_totalprice") * 2), 3L)
           .write.mode("overwrite").orc(s"$root/delta_0000003_0000003")
         // committed delete delta: kills k%12==5 (odd → delta_2, txn 2)
@@ -468,9 +432,9 @@ object Round13Ops extends Family {
             (col("k") % 4).cast("int").as("bucket"), col("k").as("rowId"),
             lit(4L).as("currentTransaction"))
           .write.mode("overwrite").orc(s"$root/delete_delta_0000004_0000004")
-        java.nio.file.Files.writeString(rootP.resolve("_aborted"), "3\n")
-        java.nio.file.Files.createFile(rootP.resolve("_STAGED"))
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_aborted"), "3\n")
       }
+      val rootP = java.nio.file.Paths.get(root)
       withConfs(s)("spark.sql.orc.impl" -> "hive") {
         val aborted = java.nio.file.Files.readAllLines(rootP.resolve("_aborted"))
           .asScala.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet

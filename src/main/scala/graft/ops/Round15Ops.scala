@@ -1214,10 +1214,7 @@ object Round15Ops extends Family {
     // Graded per label: samples, members (must be 2×), exact payload
     // byte conservation vs the relational source.
     "source_webdataset_shard" -> ((s, d) => {
-      val dir = Scratch.opDir("wds", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("wds", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 5 === 0)
           .select(col("doc_id"), col("text"), col("lang")).collect()
         rows.groupBy(_.getLong(0) % 3).foreach { case (part, rs) =>
@@ -1233,7 +1230,6 @@ object Round15Ops extends Family {
           out.write(new Array[Byte](1024)) // tar end-of-archive blocks
           out.close()
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
@@ -1265,10 +1261,7 @@ object Round15Ops extends Family {
     // convention). Graded per lang: members, exact payload byte
     // conservation — a truncated or double-read member breaks the mass.
     "source_zip_shard" -> ((s, d) => {
-      val dir = Scratch.opDir("zipshard", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("zipshard", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 4 === 1)
           .select(col("doc_id"), col("text"), col("lang")).collect()
         rows.groupBy(_.getLong(0) % 3).foreach { case (part, rs) =>
@@ -1283,7 +1276,6 @@ object Round15Ops extends Family {
           }
           zout.close()
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
@@ -1314,20 +1306,19 @@ object Round15Ops extends Family {
     // Writable re-use bug — the classic sequenceFile trap — duplicates
     // the last record and breaks the census).
     "source_sequencefile_roundtrip" -> ((s, d) => {
-      val dir = Scratch.opDir("seqfile", d) + "/data"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
+      val root = Scratch.staged("seqfile", d) { root =>
         val rows = Tables.orders(s, d).where(col("o_orderkey") % 13 === 0)
           .select(col("o_orderkey"),
             concat(col("o_orderstatus"), lit("|"),
               round(col("o_totalprice") * 100).cast("bigint").cast("string")))
         val rdd = rows.rdd.map(r => (r.getLong(0), r.getString(1)))
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(dir), true)
-        rdd.saveAsSequenceFile(dir)
+          .delete(new org.apache.hadoop.fs.Path(s"$root/data"), true)
+        rdd.saveAsSequenceFile(s"$root/data")
       }
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
-      s.sparkContext.sequenceFile[Long, String](dir).toDF("okey", "payload")
+      s.sparkContext.sequenceFile[Long, String](s"$root/data").toDF("okey", "payload")
         .select(col("okey"), split(col("payload"), "\\|").as("f"))
         .select(col("okey"), col("f").getItem(0).as("status"),
           col("f").getItem(1).cast("bigint").as("cents"))

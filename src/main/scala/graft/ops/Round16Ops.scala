@@ -362,16 +362,13 @@ object Round16Ops extends Family {
     // payload — mask = ((crc>>15)|(crc<<17)) + 0xa282ead8, JDK CRC32C),
     // then read DISTRIBUTED via binaryFile + the in-executor frame
     // decoder with BOTH checksums re-verified per record (a flipped byte
-    // fails the mass AND the crc census). Staging is fixture-only (the
-    // _STAGED sentinel); production shard WRITING would be
+    // fails the mass AND the crc census). Staging is fixture-only
+    // (`Scratch.staged`); production shard WRITING would be
     // foreachPartition-side like every sink here. Graded per lang:
     // records, exact payload byte conservation, both-CRC-ok counts, key
     // range.
     "source_tfrecord" -> ((s, d) => {
-      val dir = Scratch.opDir("tfrec", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("tfrec", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 6 === 2)
           .select(col("doc_id"), col("lang"), col("text")).collect()
         rows.groupBy(_.getLong(0) % 3).foreach { case (part, rs) =>
@@ -384,7 +381,6 @@ object Round16Ops extends Family {
           }
           out.close()
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
@@ -520,10 +516,7 @@ object Round16Ops extends Family {
     // exact byte masses. The oracle replays the 512-block arithmetic from
     // the documents table directly.
     "source_webdataset_index" -> ((s, d) => {
-      val dir = Scratch.opDir("wdsidx", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("wdsidx", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 9 === 4)
           .select(col("doc_id"), col("text")).collect()
         rows.groupBy(_.getLong(0) % 2).foreach { case (part, rs) =>
@@ -545,7 +538,6 @@ object Round16Ops extends Family {
             java.nio.file.Paths.get(dir, s"shard_$part.idx"),
             idx.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
@@ -802,10 +794,7 @@ object Round16Ops extends Family {
     // mis-stepped varint shifts every later frame and shatters both
     // masses. Graded per lang.
     "source_varint_delimited" -> ((s, d) => {
-      val dir = Scratch.opDir("varint", d)
-      val staged = java.nio.file.Paths.get(dir, "_STAGED")
-      if (!java.nio.file.Files.exists(staged)) {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dir = Scratch.staged("varint", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 7 === 5)
           .select(col("doc_id"), col("lang"), col("text")).collect()
         rows.groupBy(_.getLong(0) % 3).foreach { case (part, rs) =>
@@ -818,7 +807,6 @@ object Round16Ops extends Family {
           }
           out.close()
         }
-        java.nio.file.Files.write(staged, Array.emptyByteArray)
       }
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._

@@ -24,6 +24,24 @@ object Scratch {
     * (the test fixture and Verify can touch several scales). */
   def opDir(prefix: String, sfDir: String): String =
     s"$dir/${prefix}_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
+
+  /** Fixture staging: the input files an operator reads, written once per
+    * (JVM, sf) into `opDir(prefix, sfDir)`, which is returned. `build(dir)`
+    * runs only while `dir/_STAGED` is absent, and the marker is written
+    * after it returns, so a build that throws is rerun on the next call.
+    * Never for an operator's own graded or computed work: that must run on
+    * every call. */
+  def staged(prefix: String, sfDir: String)(build: String => Unit): String = {
+    val d = opDir(prefix, sfDir)
+    val marker = java.nio.file.Paths.get(d, "_STAGED")
+    if (!java.nio.file.Files.exists(marker)) {
+      java.nio.file.Files.createDirectories(marker.getParent)
+      build(d)
+      java.nio.file.Files.write(marker, Array.emptyByteArray)
+    }
+    d
+  }
+
   /** Per-JVM streaming-checkpoint root on tmpfs (/dev/shm): the
     * offset/commit/state logs of every micro-batch are many small fsynced
     * files — on the scratch ext4 disk they were the dominant fixed cost

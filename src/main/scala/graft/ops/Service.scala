@@ -34,9 +34,11 @@ import graft.Tables
 object Service extends Family {
 
   /** One embedded Thrift server per JVM, started lazily on the first
-    * serving op; -1 = not yet started. Candidate ports probe past any
-    * concurrently-running sibling JVM (test + Verify). */
+    * serving op; -1 = not yet started. */
   @volatile private var boundPort: Int = -1
+  /** The server's port: pid-salted, so sibling JVMs (test + Verify) that
+    * serve at the same time do not collide. */
+  private[graft] val thriftPort: Int = 10416 + (ProcessHandle.current().pid() % 483).toInt
   // held as the public Java supertype: the Scala HiveThriftServer2 CLASS
   // is private[hive]; HiveServer2.stop() is the public lifecycle surface
   @volatile private var thriftServer: org.apache.hive.service.server.HiveServer2 = _
@@ -69,18 +71,11 @@ object Service extends Family {
       } finally c.close()
     } catch { case scala.util.control.NonFatal(_) => false }
 
-  private def ensureServer(s: SparkSession): Int = synchronized {
+  private[graft] def ensureServer(s: SparkSession): Int = synchronized {
     if (boundPort > 0) return boundPort
-    // the server reads the port from the session's runtime conf (it lands
-    // in the HiveConf via SessionState.newHadoopConf); the port is
-    // per-JVM randomized (pid-salted) so concurrent sibling JVMs don't
-    // collide, and HiveServer2's own default 10000 is polled as a
-    // fallback in case an older Hive path ignores the conf — both gated
-    // behind the identity probe above.
-    val want = 10416 + (ProcessHandle.current().pid() % 483).toInt
     s.sql(s"CREATE OR REPLACE GLOBAL TEMPORARY VIEW svc_ident_$svcToken " +
       s"AS SELECT '$svcToken' AS t")
-    s.conf.set("hive.server2.thrift.port", want.toString)
+    s.conf.set("hive.server2.thrift.port", thriftPort.toString)
     s.conf.set("hive.server2.thrift.bind.host", "localhost")
     // the HiveServer2 web UI binds a FIXED default port (10002) that a
     // sibling JVM's server (test suite + Verify run concurrently) races
@@ -88,21 +83,34 @@ object Service extends Family {
     // free. 0 disables the UI; one retry covers any remaining
     // transient bind race.
     s.conf.set("hive.server2.webui.port", "0")
-    try thriftServer = HiveThriftServer2.startWithContext(s.sqlContext)
+    // The server takes its HiveConf from a new execution Hive client, and
+    // that client reuses the Hive SessionState attached to the calling
+    // thread if there is one. Any metastore call on a thread attaches the
+    // metastore client's state, whose conf was built before the settings
+    // above: port 10000 on all interfaces. A fresh thread has no state
+    // attached, so the client builds its conf from this session's and
+    // the server binds thriftPort on localhost.
+    def start(): Unit = {
+      var failure: Option[Throwable] = None
+      val t = new Thread(() =>
+        try thriftServer = HiveThriftServer2.startWithContext(s.sqlContext)
+        catch { case e: Throwable => failure = Some(e) })
+      t.start(); t.join()
+      failure.foreach(e => throw e)
+    }
+    try start()
     catch {
       case scala.util.control.NonFatal(_) =>
         Thread.sleep(1000)
-        thriftServer = HiveThriftServer2.startWithContext(s.sqlContext)
+        start()
     }
     // the binary transport binds asynchronously: poll the socket
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (boundPort < 0 && System.nanoTime() < deadline) {
-      if (listening(want) && identityOk(want)) boundPort = want
-      else if (listening(10000) && identityOk(10000)) boundPort = 10000
+      if (listening(thriftPort) && identityOk(thriftPort)) boundPort = thriftPort
       else Thread.sleep(200)
     }
-    require(boundPort > 0,
-      s"thrift endpoint failed to bind $want or 10000 with our token")
+    require(boundPort > 0, s"thrift endpoint failed to bind $thriftPort with our token")
     boundPort
   }
 

@@ -283,17 +283,14 @@ object StreamingOps extends Family {
       val sink = newSinkName()
       val sch = Tables.schema(s, d, "events")
       // FileStreamSource requires a DIRECTORY; the testdata table is a bare
-      // file, so stage a zero-copy symlink inside the session scratch dir
-      // (idempotent across verify/bench re-invocations in one JVM).
-      val stageDir = java.nio.file.Paths.get(
-        Scratch.opDir("avail_now_src", d))
-      java.nio.file.Files.createDirectories(stageDir)
-      val link = stageDir.resolve("events.parquet")
-      if (!java.nio.file.Files.exists(link))
+      // file, so stage a zero-copy symlink inside the session scratch dir.
+      val stageDir = Scratch.staged("avail_now_src", d) { dir =>
         java.nio.file.Files.createSymbolicLink(
-          link, java.nio.file.Paths.get(s"$d/events.parquet"))
+          java.nio.file.Paths.get(dir, "events.parquet"),
+          java.nio.file.Paths.get(s"$d/events.parquet"))
+      }
       withFewShufflePartitions(s) {
-        val q = s.readStream.schema(sch).parquet(stageDir.toString)
+        val q = s.readStream.schema(sch).parquet(stageDir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             sum(floor(col("value") * 100).cast("bigint")).as("value_cents"))

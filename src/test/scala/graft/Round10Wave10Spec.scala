@@ -46,4 +46,19 @@ class Round10Wave10Spec extends AnyFunSuite with SparkFixture {
     rows.foreach(r => assert(r.getLong(1) == n, s"codec lost rows: $r"))
     assert(rows.map(_.getLong(2)).distinct.length == 1, "sums must agree across codecs")
   }
+
+  test("sink_codec_matrix: a second scale in one JVM gets its own rollup") {
+    val q = SparkEntry.queries("sink_codec_matrix")
+    q(spark, SparkFixture.sf0001).collect()
+    val rows = q(spark, SparkFixture.sf001).collect()
+    val want = Tables.orders(spark, SparkFixture.sf001)
+      .where(col("o_orderkey") % 5 === 0)
+      .agg(count(lit(1)), sum(round(col("o_totalprice") * 100).cast("bigint")))
+      .head()
+    assert(rows.map(_.getString(0)).toSeq.sorted == Seq("gzip", "lz4", "snappy", "zstd"))
+    rows.foreach { r =>
+      assert(r.getLong(1) == want.getLong(0), s"n is another scale's: $r")
+      assert(r.getLong(2) == want.getLong(1), s"sum_cents is another scale's: $r")
+    }
+  }
 }

@@ -30,6 +30,18 @@ class Round10Wave1Spec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("service_sql_endpoint: the Thrift server binds this JVM's pid-salted port") {
+    SparkEntry.queries("service_sql_endpoint")(spark, sf).collect()
+    val salted = 10416 + (ProcessHandle.current().pid() % 483).toInt
+    assert(graft.ops.Service.thriftPort == salted)
+    assert(graft.ops.Service.ensureServer(spark) == salted,
+      "the server is not on the port the session asked for")
+    val sock = new java.net.Socket()
+    try sock.connect(new java.net.InetSocketAddress(
+      java.net.InetAddress.getLoopbackAddress, salted), 1000)
+    finally sock.close()
+  }
+
   test("graph_hits: normalization invariants hold after the window-max rewrite") {
     val rows = SparkEntry.queries("graph_hits")(spark, SparkFixture.sf001).collect()
     assert(rows.length == 25, "one row per nation")

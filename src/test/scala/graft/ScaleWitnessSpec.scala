@@ -25,10 +25,10 @@ object ScaleWitness extends Tag("graft.ScaleWitness")
 object ScaleCorpus {
   /** Generate (or reuse) a corpus of `nDocs` documents and `nVecs`
     * embeddings under scratch; returns the sf-style directory. */
-  def ensure(s: SparkSession, nDocs: Long, nVecs: Long): String = {
-    val dir = s"${graft.ops.Scratch.dir}/scale_${nDocs}_$nVecs"
-    val done = java.nio.file.Paths.get(dir, "_DONE")
-    if (java.nio.file.Files.exists(done)) return dir
+  def ensure(s: SparkSession, nDocs: Long, nVecs: Long): String =
+    graft.ops.Scratch.staged("scale", s"${nDocs}_$nVecs")(write(s, nDocs, nVecs, _))
+
+  private def write(s: SparkSession, nDocs: Long, nVecs: Long, dir: String): Unit = {
     // token = 'w' + 4 digits (constant length 5, vocab 5000): same-length
     // replacement keeps phash tile boundaries aligned between dup twins
     def tok(seed: String, j: String) =
@@ -109,8 +109,6 @@ object ScaleCorpus {
         (expr("CAST(conv(substring(md5(concat('ev:', CAST(id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 10000")
           .cast("double") / 100.0).as("value"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    java.nio.file.Files.createFile(done)
-    dir
   }
 }
 
@@ -295,17 +293,12 @@ class ScaleWitnessSpec extends AnyFunSuite {
   /** Persons-only corpus for the identity-stack witnesses: the op reads
     * just `customer`, and the shared ScaleCorpus customer table is fixed
     * at 1000 rows — these dirs scale it with the tier instead. */
-  private def personsDir(n: Long): String = {
-    val dir = s"${graft.ops.Scratch.dir}/scale_persons_$n"
-    val done = java.nio.file.Paths.get(dir, "_DONE")
-    if (!java.nio.file.Files.exists(done)) {
+  private def personsDir(n: Long): String =
+    graft.ops.Scratch.staged("scale_persons", n.toString) { dir =>
       spark.range(1, n + 1, 1, 32)
         .select(col("id").as("c_custkey"), (col("id") % 25).cast("int").as("c_nationkey"))
         .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-      java.nio.file.Files.createFile(done)
     }
-    dir
-  }
 
   test("round-15 heavy shapes measured near-linear across 10^4..10^6 rows", ScaleWitness) {
     // identity-graph clustering: 6 synchronous min-label join rounds over
