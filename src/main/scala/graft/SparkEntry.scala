@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.ops.{Aggregates, Analytics, ApiSurface, DeltaRead, Family, Functions, GraphOps, IcebergRead, Lakehouse, LlmExt, LlmOps, LlmPipeline, LlmPrep, LlmScale, Relational, Round11Ops, Round12Ops, Round12bOps, Round12cOps, Round12dOps, Round13Ops, Round13bOps, Round13cOps, Round14Ops, Round15Ops, Round16Ops, Service, Showcase, StreamingOps, Warehouse, WindowOps}
+import graft.ops.{Aggregates, Analytics, ApiSurface, DeltaRead, Family, Functions, GraphOps, IcebergRead, Lakehouse, LlmExt, LlmOps, LlmPipeline, LlmPrep, LlmScale, Op, Relational, Round11Ops, Round12Ops, Round12bOps, Round12cOps, Round12dOps, Round13Ops, Round13bOps, Round13cOps, Round14Ops, Round15Ops, Round16Ops, Service, Showcase, StreamingOps, Warehouse, WindowOps}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 (operator inventory) and §7.
+/** Driver contract — see SURVEY.md §2 (operator inventory) and §7.
   *
-  * `queries` holds one entry per implemented operator; `oracleSql` holds the
-  * DuckDB-equivalent SQL for every oracle-verified operator (non-SQL-
-  * expressible ops — approximate/streaming/side-effecting — are ScalaTest-
-  * verified instead and intentionally absent from `oracleSql`).
+  * `queries` and `oracleSql` hold, by name, the build and the DuckDB oracle
+  * of every operator that a family in `families` declares.
   */
 object SparkEntry {
   /** Flagship query (TPC-H-Q1 pricing summary) on sf0.001; driver
@@ -23,12 +21,15 @@ object SparkEntry {
     Service, IcebergRead, DeltaRead, Round11Ops, Round12Ops, Round12bOps, Round12cOps,
     Round12dOps, Round13Ops, Round13bOps, Round13cOps, Round14Ops, Round15Ops, Round16Ops)
 
-  /** One entry per implemented operator from SURVEY.md §2. A name taken by
-    * two families throws on first use. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Family.unique(families.flatMap(_.queries): _*)
+  /** Every operator by name. A name taken twice, in one family or in two,
+    * throws on first use. */
+  private lazy val ops: Map[String, Op] = Family.unique(families.flatMap(_.ops))
 
-  /** For each oracle-verified key in `queries`, equivalent SQL runnable by
-    * DuckDB on the same parquet tables. */
-  lazy val oracleSql: Map[String, String] = Family.unique(families.flatMap(_.oracles): _*)
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ops.map { case (name, op) => name -> op.build }
+
+  /** For each key in `queries`, equivalent SQL runnable by DuckDB on the
+    * same parquet tables. */
+  lazy val oracleSql: Map[String, String] = ops.map { case (name, op) => name -> op.oracle }
 }

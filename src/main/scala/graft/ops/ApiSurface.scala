@@ -20,13 +20,13 @@ case class LineSlim(l_returnflag: String, l_quantity: Double, l_extendedprice: D
   * scans).
   */
 object ApiSurface extends Family {
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // Typed Dataset aggregation: case-class Encoder, typed filter/map,
     // groupByKey + typed aggregators. The lambdas are opaque to Catalyst
     // (scan loses column pruning beyond the .as projection — which is
     // why the projection comes FIRST), but the aggregation itself still
     // plans partial/final HashAggregate on the key.
-    "ds_typed_agg" -> ((s, d) => {
+    Op("ds_typed_agg", (s, d) => {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
       // Encoders come from the session-free Encoders factory, NOT from
@@ -55,12 +55,18 @@ object ApiSurface extends Family {
           sumBy(_ => 1L))
         .toDF("l_returnflag", "sum_qty", "cents", "n")
         .orderBy("l_returnflag")
-    }),
+    },
+      """SELECT l_returnflag,
+        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
+        |  CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+        |  COUNT(*) AS n
+        |FROM lineitem WHERE l_quantity >= 10.0
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // NA handling (DataFrameNaFunctions): nulls introduced on a
     // deterministic predicate, then fill / drop accounting in one pass
     // over the filled frame — the ingest-cleanup surface.
-    "fn_na_handling" -> ((s, d) => {
+    Op("fn_na_handling", (s, d) => {
       val e = Tables.events(s, d)
         .select(col("event_id"), col("event_type"),
           when(col("event_type") =!= "view",
@@ -71,36 +77,60 @@ object ApiSurface extends Family {
           sum(when(col("cents_n") === -1L, 1L).otherwise(0L)).as("n_filled"),
           sum(when(col("cents_n") =!= -1L, col("cents_n")).otherwise(0L)).as("cents_sum"))
         .orderBy("event_type")
-    }),
+    },
+      """WITH e AS (SELECT event_id, event_type,
+        |    CASE WHEN event_type <> 'view'
+        |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE -1 END AS cents_f
+        |  FROM events)
+        |SELECT event_type, COUNT(*) AS n_rows,
+        |  CAST(SUM(CASE WHEN cents_f = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
+        |  CAST(SUM(CASE WHEN cents_f <> -1 THEN cents_f ELSE 0 END) AS BIGINT) AS cents_sum
+        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // stat.crosstab — the contingency-table helper: one two-key count
     // shuffles, the pivot is a tiny projection. Column names come from
     // the data (priority values), which is exactly what the driver's
     // name-sorted compare exercises.
-    "agg_crosstab" -> ((s, d) =>
+    Op("agg_crosstab", (s, d) =>
       Tables.orders(s, d)
         .stat.crosstab("o_orderstatus", "o_orderpriority")
-        .orderBy("o_orderstatus_o_orderpriority")),
+        .orderBy("o_orderstatus_o_orderpriority"),
+      """SELECT o_orderstatus AS o_orderstatus_o_orderpriority,
+        |  CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS "1-URGENT",
+        |  CAST(SUM(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS "2-HIGH",
+        |  CAST(SUM(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS "3-MEDIUM",
+        |  CAST(SUM(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS "4-NOT SPECIFIED",
+        |  CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS "5-LOW"
+        |FROM orders GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""".stripMargin),
 
     // explode_outer — the empty-collection row-preserving explode: docs
     // whose z-token list is empty still emit one null-token row (an
     // inner explode would drop them). Per-doc accounting proves the
     // outer semantics.
-    "udtf_explode_outer" -> ((s, d) =>
+    Op("udtf_explode_outer", (s, d) =>
       Tables.documents(s, d)
         .withColumn("ztoks", expr("filter(split(text, ' '), t -> t LIKE 'z%')"))
         .select(col("doc_id"), explode_outer(col("ztoks")).as("ztok"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_rows"),
           count(col("ztok")).as("n_ztoks"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """WITH z AS (SELECT doc_id,
+        |    list_filter(string_split(text, ' '), t -> t LIKE 'z%') AS ztoks
+        |  FROM documents),
+        |x AS (SELECT doc_id,
+        |        unnest(CASE WHEN len(ztoks) = 0 THEN [NULL] ELSE ztoks END) AS ztok
+        |      FROM z)
+        |SELECT doc_id, COUNT(*) AS n_rows, COUNT(ztok) AS n_ztoks
+        |FROM x GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // Range-partitioned sorted parquet (the zone-map layout): rows range-
     // partitioned on the sort key and sorted inside each file, so file-
     // and row-group-level min/max stats prune a key-range scan to a
     // single file at any scale. Graded read = a range aggregate over the
     // written layout.
-    "sink_range_sorted" -> ((s, d) => {
+    Op("sink_range_sorted", (s, d) => {
       val dir = Scratch.opDir("range_sorted", d)
       Tables.orders(s, d)
         .repartitionByRange(4, col("o_orderkey"))
@@ -111,14 +141,18 @@ object ApiSurface extends Family {
         .agg(count(lit(1)).as("n"),
           sum(round(col("o_totalprice") * 100).cast("bigint")).as("cents"),
           min("o_orderkey").as("min_k"), max("o_orderkey").as("max_k"))
-    }),
+    },
+      """SELECT COUNT(*) AS n,
+        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+        |  MIN(o_orderkey) AS min_k, MAX(o_orderkey) AS max_k
+        |FROM orders WHERE o_orderkey >= 1000 AND o_orderkey < 2000""".stripMargin),
 
     // Observation metrics (df.observe): per-job data-quality counters
     // collected on the DRIVER as the job runs — zero extra passes, zero
     // extra shuffles (an AccumulatorV2 piggybacks on the existing scan).
     // The graded frame is the observed metrics themselves; the oracle
     // recomputes them as plain aggregates.
-    "api_observe" -> ((s, d) => {
+    Op("api_observe", (s, d) => {
       val obs = org.apache.spark.sql.Observation()
       val observed = Tables.orders(s, d).observe(obs,
         count(lit(1)).as("n_orders"),
@@ -132,26 +166,43 @@ object ApiSurface extends Family {
       Seq((m("n_orders").asInstanceOf[Long], m("total_price").asInstanceOf[Double],
         m("min_key").asInstanceOf[Long], m("max_key").asInstanceOf[Long]))
         .toDF("n_orders", "total_price", "min_key", "max_key")
-    }),
+    },
+      """SELECT COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price,
+        |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
+        |FROM orders""".stripMargin),
 
     // Dataset.transpose — the report-shaping pivot of a SMALL aggregate
     // (rows become columns; strictly a driver-sized operation, which is
     // why it follows a groupBy that reduced the fact to 3 rows). Column
     // names come from the index column's data, exercising the driver's
     // name-sorted compare the same way crosstab does.
-    "api_transpose" -> ((s, d) =>
+    Op("api_transpose", (s, d) =>
       Tables.lineitem(s, d)
         .groupBy("l_returnflag")
         .agg(sum(col("l_quantity").cast("bigint")).as("qty"),
           count(lit(1)).as("cnt"))
         .transpose(col("l_returnflag"))
-        .orderBy("key")),
+        .orderBy("key"),
+      """SELECT 'cnt' AS key,
+        |  (SELECT COUNT(*) FROM lineitem WHERE l_returnflag = 'A') AS "A",
+        |  (SELECT COUNT(*) FROM lineitem WHERE l_returnflag = 'N') AS "N",
+        |  (SELECT COUNT(*) FROM lineitem WHERE l_returnflag = 'R') AS "R"
+        |UNION ALL
+        |SELECT 'qty',
+        |  (SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
+        |   FROM lineitem WHERE l_returnflag = 'A'),
+        |  (SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
+        |   FROM lineitem WHERE l_returnflag = 'N'),
+        |  (SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
+        |   FROM lineitem WHERE l_returnflag = 'R')
+        |ORDER BY key""".stripMargin),
 
     // JSONL roundtrip — the interchange format every training-data
     // pipeline exports to. Explicit read schema (inference would widen
     // int64 on empty partitions); graded read is a per-language rollup
     // of the landed files.
-    "sink_jsonl" -> ((s, d) => {
+    Op("sink_jsonl", (s, d) => {
       val dir = Scratch.opDir("jsonl_docs", d)
       Tables.documents(s, d).select("doc_id", "lang", "source", "n_chars")
         .write.mode("overwrite").json(dir)
@@ -160,7 +211,10 @@ object ApiSurface extends Family {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         .orderBy("lang")
-    }),
+    },
+      """SELECT lang, COUNT(*) AS n_docs,
+        |  CAST(SUM(n_chars) AS BIGINT) AS chars
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
 
     // Parameterized SQL (Spark 3.5+/4 surface): named parameter markers
     // (:name) bound server-side — the injection-safe service-layer query
@@ -173,7 +227,7 @@ object ApiSurface extends Family {
     // asserts both), and the outer rollup grades content conservation —
     // at 100 TB this layout op is what feeds every bucketed write and
     // co-located join. Oracle replays the rollup without the layout.
-    "api_sql_cluster_by" -> ((s, d) => {
+    Op("api_sql_cluster_by", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_csb_orders")
       s.sql(
         """SELECT bucket, COUNT(*) AS n_orders,
@@ -187,9 +241,15 @@ object ApiSurface extends Family {
           |  DISTRIBUTE BY bucket SORT BY bucket, o_orderkey
           |)
           |GROUP BY bucket ORDER BY bucket""".stripMargin)
-    }),
+    },
+      // Layout-free replay: DISTRIBUTE/SORT BY must not change content.
+      """SELECT o_custkey % 16 AS bucket, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+        |  CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
+        |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "api_sql_params" -> ((s, d) => {
+    Op("api_sql_params", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_param_orders")
       s.sql(
         """SELECT o_orderstatus, COUNT(*) AS n_orders,
@@ -197,7 +257,12 @@ object ApiSurface extends Family {
           |FROM IDENTIFIER(:tbl) WHERE o_totalprice > :minp
           |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
         Map("tbl" -> "graft_param_orders", "minp" -> 150000))
-    }),
+    },
+      // The parameter-bound query must equal its literal-inlined equivalent.
+      """SELECT o_orderstatus, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders WHERE o_totalprice > 150000
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // GROUP BY ALL / ORDER BY ALL (SQL-2023-adjacent sugar, in Spark
     // since 3.4): every non-aggregate select item becomes a grouping
@@ -205,14 +270,24 @@ object ApiSurface extends Family {
     // exploratory-SQL dialect DuckDB popularized. The resolved plan is
     // identical to the explicit form (the oracle IS the explicit form),
     // so pushdown/partial-agg behavior is unchanged.
-    "api_sql_group_all" -> ((s, d) => {
+    Op("api_sql_group_all", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_gba_orders")
       s.sql(
         """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
           |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
           |FROM graft_gba_orders
           |GROUP BY ALL ORDER BY ALL""".stripMargin)
-    }),
+    },
+      // GROUP BY ALL replayed in the explicit classic form. ORDER BY ALL
+      // sorts by the full select list left-to-right; (status, priority)
+      // is already a unique grouping key, so the trailing aggregate sort
+      // keys can never reorder anything — the explicit two-key sort is
+      // total for the same reason.
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders
+        |GROUP BY o_orderstatus, o_orderpriority
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin),
 
     // SQL PIPE syntax (new in Spark 4): the |> operator-chain dialect —
     // FROM … |> WHERE … |> AGGREGATE … GROUP BY … |> WHERE (post-agg
@@ -226,7 +301,7 @@ object ApiSurface extends Family {
     // leave SQL for. Guarded recursion (ancestor > 0) terminates in
     // ⌈log₂ 25⌉ rounds; all-integer, non-negative, so DIV == floor. The
     // per-depth rollup grades every recursion level at once.
-    "api_sql_recursive" -> ((s, d) => {
+    Op("api_sql_recursive", (s, d) => {
       Tables.nation(s, d).createOrReplaceTempView("graft_rec_nation")
       s.sql(
         """WITH RECURSIVE anc(node, ancestor, depth) AS (
@@ -241,9 +316,21 @@ object ApiSurface extends Family {
           |  CAST(SUM(node) AS BIGINT) AS sum_node,
           |  CAST(SUM(ancestor) AS BIGINT) AS sum_anc
           |FROM anc GROUP BY depth ORDER BY depth""".stripMargin)
-    }),
+    },
+      // The identical guarded recursion; // is DIV on non-negatives.
+      """WITH RECURSIVE anc(node, ancestor, depth) AS (
+        |  SELECT n_nationkey, n_nationkey, 0 FROM nation
+        |  UNION ALL
+        |  SELECT a.node, (a.ancestor - 1) // 2, a.depth + 1
+        |  FROM anc a WHERE a.ancestor > 0
+        |)
+        |SELECT CAST(depth AS BIGINT) AS depth,
+        |  CAST(COUNT(*) AS BIGINT) AS n_nodes,
+        |  CAST(SUM(node) AS BIGINT) AS sum_node,
+        |  CAST(SUM(ancestor) AS BIGINT) AS sum_anc
+        |FROM anc GROUP BY depth ORDER BY depth""".stripMargin),
 
-    "api_sql_pipe" -> ((s, d) => {
+    Op("api_sql_pipe", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_pipe_orders")
       s.sql(
         """FROM graft_pipe_orders
@@ -253,13 +340,19 @@ object ApiSurface extends Family {
           |   GROUP BY o_orderpriority
           ||> WHERE n_orders > 1
           ||> ORDER BY o_orderpriority""".stripMargin)
-    }),
+    },
+      // The pipe chain replayed in classic form.
+      """SELECT o_orderpriority, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders WHERE o_orderstatus <> 'P'
+        |GROUP BY o_orderpriority HAVING COUNT(*) > 1
+        |ORDER BY o_orderpriority""".stripMargin),
 
     // SQL-body scalar UDFs (new in Spark 4): CREATE FUNCTION ... RETURN
     // <expr> — a declarative function the optimizer INLINES into the plan
     // (stays inside codegen, unlike a JVM closure), and the first UDF
     // shape a SQL-first warehouse user reaches for.
-    "udf_sql" -> ((s, d) => {
+    Op("udf_sql", (s, d) => {
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_taxed(p DOUBLE, t DOUBLE)
               |RETURNS DOUBLE RETURN p * (1.0 + t)""".stripMargin)
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_size_band(sz INT)
@@ -270,7 +363,12 @@ object ApiSurface extends Family {
         """SELECT p_partkey, ROUND(graft_taxed(p_retailprice, 0.08), 4) AS taxed,
           |  graft_size_band(CAST(p_size AS INT)) AS band
           |FROM graft_sqludf_part ORDER BY p_partkey""".stripMargin)
-    }),
+    },
+      // The SQL UDF bodies replayed inline (what the optimizer itself does).
+      """SELECT p_partkey, ROUND(p_retailprice * (1.0 + 0.08), 4) AS taxed,
+        |  CASE WHEN p_size <= 10 THEN 'small'
+        |       WHEN p_size <= 30 THEN 'medium' ELSE 'large' END AS band
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // Typed COGROUP (KeyValueGroupedDataset.cogroup — the Dataset API's
     // full-outer per-key merge, the surface a JVM-first user reaches for
@@ -281,7 +379,7 @@ object ApiSurface extends Family {
     // co-partition exchange per side — the same shuffle a join would
     // cost — and the oracle is the relational full-outer rollup the
     // typed path must equal.
-    "ds_typed_cogroup" -> ((s, d) => {
+    Op("ds_typed_cogroup", (s, d) => {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
       val cust = Tables.customer(s, d)
@@ -300,7 +398,24 @@ object ApiSurface extends Family {
         Iterator((nk, cn, cSum, sn, sSum, cSum - sSum))
       }.toDF("nationkey", "n_cust", "cust_cents", "n_supp", "supp_cents", "gap_cents")
         .orderBy("nationkey")
-    }),
+    },
+      // The relational full-outer rollup the typed cogroup must equal.
+      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
+        |    CAST(COUNT(*) AS BIGINT) AS n_cust,
+        |    CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS cust_cents
+        |  FROM customer GROUP BY 1),
+        |s AS (SELECT CAST(s_nationkey AS BIGINT) AS nationkey,
+        |    CAST(COUNT(*) AS BIGINT) AS n_supp,
+        |    CAST(SUM(CAST(CAST(s_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS supp_cents
+        |  FROM supplier GROUP BY 1)
+        |SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
+        |  CAST(COALESCE(n_cust, 0) AS BIGINT) AS n_cust,
+        |  CAST(COALESCE(cust_cents, 0) AS BIGINT) AS cust_cents,
+        |  CAST(COALESCE(n_supp, 0) AS BIGINT) AS n_supp,
+        |  CAST(COALESCE(supp_cents, 0) AS BIGINT) AS supp_cents,
+        |  CAST(COALESCE(cust_cents, 0) - COALESCE(supp_cents, 0) AS BIGINT) AS gap_cents
+        |FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
+        |ORDER BY nationkey""".stripMargin),
 
     // EXECUTE IMMEDIATE (the SQL-scripting dynamic-dispatch surface new
     // in Spark 4, beside api_sql_params' client-side binding): the query
@@ -314,7 +429,7 @@ object ApiSurface extends Family {
     // to a single leaf — the attested node-count drop — and (b) change
     // NOTHING about the answer. At 100 TB this is what keeps a 50-round
     // iteration from re-planning 50 stacked stages.
-    "api_checkpoint_truncation" -> ((s, d) => {
+    Op("api_checkpoint_truncation", (s, d) => {
       val staged = Tables.orders(s, d)
         .select(col("o_orderstatus"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
@@ -330,7 +445,14 @@ object ApiSurface extends Family {
         .withColumn("plan_truncated", lit(after < before))
         .withColumn("leaf_only", lit(after == 1L))
         .orderBy("o_orderstatus")
-    }),
+    },
+      // The dispatched text inlined — dynamic dispatch must be invisible.
+      // Truncation must be answer-invisible: plain rollup + TRUE flags.
+      """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
+        |  TRUE AS plan_truncated, TRUE AS leaf_only
+        |FROM orders WHERE ROUND(o_totalprice * 100) > 0
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // SQL SCRIPTING — the Spark 4.x procedural surface (BEGIN/DECLARE/
     // WHILE/SET, SQL:2023 PSM shape): the rollup is computed by a LOOP
@@ -338,7 +460,7 @@ object ApiSurface extends Family {
     // through script VARIABLES; the driver-visible result is the final
     // SELECT, which must equal the plain one-statement rollup — the
     // procedural machinery must be semantically invisible.
-    "api_sql_scripting" -> ((s, d) => {
+    Op("api_sql_scripting", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_script_orders")
       // a script runs when `sql` is called and returns its last result as
       // a local relation, so the conf is consumed inside the scope
@@ -357,9 +479,14 @@ object ApiSurface extends Family {
           |  END WHILE;
           |  SELECT n_seen, total_cents, CAST(i AS BIGINT) AS n_loops;
           |END""".stripMargin))
-    }),
+    },
+      // The loop must be invisible: whole-table rollup + the loop count.
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_seen,
+        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS total_cents,
+        |  CAST(3 AS BIGINT) AS n_loops
+        |FROM orders""".stripMargin),
 
-    "api_sql_execute_immediate" -> ((s, d) => {
+    Op("api_sql_execute_immediate", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_ei_orders")
       s.sql("DECLARE OR REPLACE VARIABLE graft_ei_stmt STRING")
       s.sql(
@@ -368,7 +495,10 @@ object ApiSurface extends Family {
           |     CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
           |   FROM graft_ei_orders WHERE o_totalprice > ? GROUP BY 1 ORDER BY 1'""".stripMargin)
       s.sql("EXECUTE IMMEDIATE graft_ei_stmt USING 100000")
-    }),
+    },
+      """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders WHERE o_totalprice > 100000 GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Typed joinWith — the Dataset join that KEEPS both sides as typed
     // values (a join returns flattened columns; joinWith returns
@@ -377,7 +507,7 @@ object ApiSurface extends Family {
     // projection, then rolled up per market segment in exact cents. The
     // join itself plans the same SortMergeJoin/broadcast a DataFrame join
     // would — joinWith changes the OUTPUT SHAPE, not the physical plan.
-    "ds_typed_joinwith" -> ((s, d) => {
+    Op("ds_typed_joinwith", (s, d) => {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
       val ords = Tables.orders(s, d)
@@ -394,7 +524,12 @@ object ApiSurface extends Family {
         .groupBy("seg")
         .agg(count(lit(1)).as("n_orders"), sum("cents").as("seg_cents"))
         .orderBy("seg")
-    }),
+    },
+      // The relational join+rollup the typed pair path must equal.
+      """SELECT c.c_mktsegment AS seg, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS seg_cents
+        |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
+        |GROUP BY 1 ORDER BY seg""".stripMargin),
 
     // Typed flatMapGroups — per-key imperative logic over an UNORDERED
     // group iterator (the contract a typed user must respect; anything
@@ -402,7 +537,7 @@ object ApiSurface extends Family {
     // (cents, event_id) pairs under lexicographic comparison, so the
     // result is deterministic REGARDLESS of iterator order. One row per
     // event_type; plans one key exchange like any groupBy.
-    "ds_typed_flatmap_groups" -> ((s, d) => {
+    Op("ds_typed_flatmap_groups", (s, d) => {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
       val ev = Tables.events(s, d)
@@ -423,19 +558,8 @@ object ApiSurface extends Family {
         Iterator((tpe, t1._1, t1._2, t2._1, t2._2))
       }.toDF("event_type", "top1_cents", "top1_id", "top2_cents", "top2_id")
         .orderBy("event_type")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // The relational join+rollup the typed pair path must equal.
-    "ds_typed_joinwith" ->
-      """SELECT c.c_mktsegment AS seg, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS seg_cents
-        |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-        |GROUP BY 1 ORDER BY seg""".stripMargin,
-
-    // The window top-2 the unordered-iterator fold must equal.
-    "ds_typed_flatmap_groups" ->
+    },
+      // The window top-2 the unordered-iterator fold must equal.
       """WITH e AS (SELECT event_type, CAST(event_id AS BIGINT) AS event_id,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
         |r AS (SELECT event_type, event_id, cents,
@@ -447,172 +571,6 @@ object ApiSurface extends Family {
         |  CAST(MAX(CASE WHEN rn = 1 THEN event_id END) AS BIGINT) AS top1_id,
         |  CAST(MAX(CASE WHEN rn = 2 THEN cents END) AS BIGINT) AS top2_cents,
         |  CAST(MAX(CASE WHEN rn = 2 THEN event_id END) AS BIGINT) AS top2_id
-        |FROM r GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // The dispatched text inlined — dynamic dispatch must be invisible.
-    // Truncation must be answer-invisible: plain rollup + TRUE flags.
-    "api_checkpoint_truncation" ->
-      """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  TRUE AS plan_truncated, TRUE AS leaf_only
-        |FROM orders WHERE ROUND(o_totalprice * 100) > 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The loop must be invisible: whole-table rollup + the loop count.
-    "api_sql_scripting" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_seen,
-        |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS total_cents,
-        |  CAST(3 AS BIGINT) AS n_loops
-        |FROM orders""".stripMargin,
-
-    "api_sql_execute_immediate" ->
-      """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders WHERE o_totalprice > 100000 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The relational full-outer rollup the typed cogroup must equal.
-    "ds_typed_cogroup" ->
-      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-        |    CAST(COUNT(*) AS BIGINT) AS n_cust,
-        |    CAST(SUM(CAST(CAST(c_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS cust_cents
-        |  FROM customer GROUP BY 1),
-        |s AS (SELECT CAST(s_nationkey AS BIGINT) AS nationkey,
-        |    CAST(COUNT(*) AS BIGINT) AS n_supp,
-        |    CAST(SUM(CAST(CAST(s_acctbal AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS supp_cents
-        |  FROM supplier GROUP BY 1)
-        |SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
-        |  CAST(COALESCE(n_cust, 0) AS BIGINT) AS n_cust,
-        |  CAST(COALESCE(cust_cents, 0) AS BIGINT) AS cust_cents,
-        |  CAST(COALESCE(n_supp, 0) AS BIGINT) AS n_supp,
-        |  CAST(COALESCE(supp_cents, 0) AS BIGINT) AS supp_cents,
-        |  CAST(COALESCE(cust_cents, 0) - COALESCE(supp_cents, 0) AS BIGINT) AS gap_cents
-        |FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "ds_typed_agg" ->
-      """SELECT l_returnflag,
-        |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |  COUNT(*) AS n
-        |FROM lineitem WHERE l_quantity >= 10.0
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "fn_na_handling" ->
-      """WITH e AS (SELECT event_id, event_type,
-        |    CASE WHEN event_type <> 'view'
-        |      THEN CAST(FLOOR(value * 100) AS BIGINT) ELSE -1 END AS cents_f
-        |  FROM events)
-        |SELECT event_type, COUNT(*) AS n_rows,
-        |  CAST(SUM(CASE WHEN cents_f = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_filled,
-        |  CAST(SUM(CASE WHEN cents_f <> -1 THEN cents_f ELSE 0 END) AS BIGINT) AS cents_sum
-        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "agg_crosstab" ->
-      """SELECT o_orderstatus AS o_orderstatus_o_orderpriority,
-        |  CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS "1-URGENT",
-        |  CAST(SUM(CASE WHEN o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END) AS BIGINT) AS "2-HIGH",
-        |  CAST(SUM(CASE WHEN o_orderpriority = '3-MEDIUM' THEN 1 ELSE 0 END) AS BIGINT) AS "3-MEDIUM",
-        |  CAST(SUM(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 1 ELSE 0 END) AS BIGINT) AS "4-NOT SPECIFIED",
-        |  CAST(SUM(CASE WHEN o_orderpriority = '5-LOW' THEN 1 ELSE 0 END) AS BIGINT) AS "5-LOW"
-        |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-
-    "udtf_explode_outer" ->
-      """WITH z AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), t -> t LIKE 'z%') AS ztoks
-        |  FROM documents),
-        |x AS (SELECT doc_id,
-        |        unnest(CASE WHEN len(ztoks) = 0 THEN [NULL] ELSE ztoks END) AS ztok
-        |      FROM z)
-        |SELECT doc_id, COUNT(*) AS n_rows, COUNT(ztok) AS n_ztoks
-        |FROM x GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "sink_range_sorted" ->
-      """SELECT COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |  MIN(o_orderkey) AS min_k, MAX(o_orderkey) AS max_k
-        |FROM orders WHERE o_orderkey >= 1000 AND o_orderkey < 2000""".stripMargin,
-
-    "api_observe" ->
-      """SELECT COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price,
-        |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-        |FROM orders""".stripMargin,
-
-    "api_transpose" ->
-      """SELECT 'cnt' AS key,
-        |  (SELECT COUNT(*) FROM lineitem WHERE l_returnflag = 'A') AS "A",
-        |  (SELECT COUNT(*) FROM lineitem WHERE l_returnflag = 'N') AS "N",
-        |  (SELECT COUNT(*) FROM lineitem WHERE l_returnflag = 'R') AS "R"
-        |UNION ALL
-        |SELECT 'qty',
-        |  (SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
-        |   FROM lineitem WHERE l_returnflag = 'A'),
-        |  (SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
-        |   FROM lineitem WHERE l_returnflag = 'N'),
-        |  (SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
-        |   FROM lineitem WHERE l_returnflag = 'R')
-        |ORDER BY key""".stripMargin,
-
-    "sink_jsonl" ->
-      """SELECT lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // Layout-free replay: DISTRIBUTE/SORT BY must not change content.
-    "api_sql_cluster_by" ->
-      """SELECT o_custkey % 16 AS bucket, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |  CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
-        |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The parameter-bound query must equal its literal-inlined equivalent.
-    "api_sql_params" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders WHERE o_totalprice > 150000
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // GROUP BY ALL replayed in the explicit classic form. ORDER BY ALL
-    // sorts by the full select list left-to-right; (status, priority)
-    // is already a unique grouping key, so the trailing aggregate sort
-    // keys can never reorder anything — the explicit two-key sort is
-    // total for the same reason.
-    "api_sql_group_all" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders
-        |GROUP BY o_orderstatus, o_orderpriority
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-
-    // The identical guarded recursion; // is DIV on non-negatives.
-    "api_sql_recursive" ->
-      """WITH RECURSIVE anc(node, ancestor, depth) AS (
-        |  SELECT n_nationkey, n_nationkey, 0 FROM nation
-        |  UNION ALL
-        |  SELECT a.node, (a.ancestor - 1) // 2, a.depth + 1
-        |  FROM anc a WHERE a.ancestor > 0
-        |)
-        |SELECT CAST(depth AS BIGINT) AS depth,
-        |  CAST(COUNT(*) AS BIGINT) AS n_nodes,
-        |  CAST(SUM(node) AS BIGINT) AS sum_node,
-        |  CAST(SUM(ancestor) AS BIGINT) AS sum_anc
-        |FROM anc GROUP BY depth ORDER BY depth""".stripMargin,
-
-    // The pipe chain replayed in classic form.
-    "api_sql_pipe" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders WHERE o_orderstatus <> 'P'
-        |GROUP BY o_orderpriority HAVING COUNT(*) > 1
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    // The SQL UDF bodies replayed inline (what the optimizer itself does).
-    "udf_sql" ->
-      """SELECT p_partkey, ROUND(p_retailprice * (1.0 + 0.08), 4) AS taxed,
-        |  CASE WHEN p_size <= 10 THEN 'small'
-        |       WHEN p_size <= 30 THEN 'medium' ELSE 'large' END AS band
-        |FROM part ORDER BY p_partkey""".stripMargin
+        |FROM r GROUP BY 1 ORDER BY event_type""".stripMargin)
   )
 }

@@ -79,8 +79,8 @@ object DeltaRead extends Family {
     live.toSeq.map(p => s"$root/$p")
   }
 
-  val queries: Map[String, Q] = unique(
-    "source_delta_read" -> ((s, d) => {
+  val ops: Seq[Op] = Seq(
+    Op("source_delta_read", (s, d) => {
       val root = ensureTable(s, d)
       def rollup(v: Long): DataFrame =
         s.read.parquet(liveFiles(root, Some(v)): _*)
@@ -94,14 +94,10 @@ object DeltaRead extends Family {
       rollup(0L).unionByName(rollup(1L))
         .select("version", "o_orderstatus", "n_orders", "total")
         .orderBy("version", "o_orderstatus")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Replays file membership from the deterministic build: version 0
-    // serves A (%3=0) and B (%3=1); version 1 serves A and C (%3=2) —
-    // the removed B must not be read at the head.
-    "source_delta_read" ->
+    },
+      // Replays file membership from the deterministic build: version 0
+      // serves A (%3=0) and B (%3=1); version 1 serves A and C (%3=2) —
+      // the removed B must not be read at the head.
       """WITH v0 AS (SELECT CAST(0 AS BIGINT) AS version, o_orderstatus,
         |    COUNT(*) AS n_orders,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
@@ -111,6 +107,6 @@ object DeltaRead extends Family {
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
         |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2)
         |SELECT * FROM v0 UNION ALL SELECT * FROM v1
-        |ORDER BY version, o_orderstatus""".stripMargin
+        |ORDER BY version, o_orderstatus""".stripMargin)
   )
 }

@@ -13,8 +13,8 @@ import graft.Tables
   * (ints cast explicitly where DuckDB widens to BIGINT).
   */
 object Functions extends Family {
-  val queries: Map[String, Q] = unique(
-    "fn_string" -> ((s, d) =>
+  val ops: Seq[Op] = Seq(
+    Op("fn_string", (s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         upper(col("p_name")).as("up"),
@@ -29,9 +29,22 @@ object Functions extends Family {
         instr(col("p_name"), "e").as("pos_e"),
         element_at(split(col("p_name"), " "), 1).as("w1"),
         col("p_name").like("%bolt%").as("has_bolt"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey,
+        |  upper(p_name) AS up, lower(p_type) AS lo,
+        |  trim('  ' || p_brand || '  ') AS tr,
+        |  substring(p_name, 1, 5) AS sub,
+        |  CAST(length(p_name) AS INT) AS len,
+        |  p_brand || '/' || p_type AS cat,
+        |  lpad(CAST(p_size AS VARCHAR), 4, '0') AS pad,
+        |  regexp_replace(p_name, 'a', '@', 'g') AS rrep,
+        |  regexp_extract(p_name, '([a-z]+)$', 1) AS rext,
+        |  CAST(instr(p_name, 'e') AS INT) AS pos_e,
+        |  string_split(p_name, ' ')[1] AS w1,
+        |  p_name LIKE '%bolt%' AS has_bolt
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    "fn_date" -> ((s, d) =>
+    Op("fn_date", (s, d) =>
       Tables.orders(s, d).select(
         col("o_orderkey"),
         year(col("o_orderdate")).as("yr"),
@@ -45,9 +58,21 @@ object Functions extends Family {
         datediff(lit("2002-01-01").cast("date"), to_date(col("o_orderdate"))).as("days_to"),
         months_between(lit("2002-01-01").cast("timestamp"), date_trunc("month", col("o_orderdate")))
           .cast("int").as("mons_to"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """SELECT o_orderkey,
+        |  CAST(year(o_orderdate) AS INT) AS yr,
+        |  CAST(month(o_orderdate) AS INT) AS mo,
+        |  CAST(quarter(o_orderdate) AS INT) AS qt,
+        |  CAST(dayofweek(o_orderdate) + 1 AS INT) AS dw,
+        |  strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS mon_start,
+        |  strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS plus30,
+        |  strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus3m,
+        |  strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS mon_end,
+        |  CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INT) AS days_to,
+        |  CAST(datediff('month', date_trunc('month', CAST(o_orderdate AS DATE)), DATE '2002-01-01') AS INT) AS mons_to
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
-    "fn_math" -> ((s, d) =>
+    Op("fn_math", (s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         round(col("p_retailprice") * 1.1, 2).as("r2"),
@@ -63,9 +88,24 @@ object Functions extends Family {
         signum(col("p_size") - 20).cast("int").as("sg"),
         greatest(col("p_size"), lit(25)).as("gr"),
         least(col("p_size"), lit(25)).as("ls"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey,
+        |  round(p_retailprice * 1.1, 2) AS r2,
+        |  CAST(floor(p_retailprice) AS BIGINT) AS fl,
+        |  CAST(ceil(p_retailprice) AS BIGINT) AS ce,
+        |  abs(p_size * -1) AS ab,
+        |  power(p_size, 2) AS pw,
+        |  round(sqrt(p_size), 6) AS sq,
+        |  round(ln(p_retailprice), 6) AS lnp,
+        |  round(log10(p_retailprice), 6) AS l10,
+        |  round(exp(p_size / 10.0), 6) AS ex,
+        |  p_size % 7 AS md,
+        |  CAST(sign(p_size - 20) AS INT) AS sg,
+        |  greatest(p_size, 25) AS gr,
+        |  least(p_size, 25) AS ls
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    "fn_conditional" -> ((s, d) =>
+    Op("fn_conditional", (s, d) =>
       Tables.orders(s, d).select(
         col("o_orderkey"),
         when(col("o_totalprice") > 300000, "big")
@@ -75,7 +115,15 @@ object Functions extends Family {
         expr("IF(o_totalprice > 250000, 1, 0)").as("flag"),
         coalesce(expr("NULLIF(o_orderstatus, 'P')"), lit("pending")).as("co"),
         col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("is_hi"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """SELECT o_orderkey,
+        |  CASE WHEN o_totalprice > 300000 THEN 'big'
+        |       WHEN o_totalprice > 100000 THEN 'mid' ELSE 'small' END AS size_cat,
+        |  CASE o_orderstatus WHEN 'F' THEN 'finished' WHEN 'O' THEN 'open' ELSE 'other' END AS st,
+        |  IF(o_totalprice > 250000, 1, 0) AS flag,
+        |  COALESCE(NULLIF(o_orderstatus, 'P'), 'pending') AS co,
+        |  o_orderpriority IN ('1-URGENT', '2-HIGH') AS is_hi
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // Column-level encryption (aes_encrypt/aes_decrypt — PII-at-rest for
     // individual columns, the governance primitive under masked views):
@@ -84,7 +132,7 @@ object Functions extends Family {
     // the ciphertext must actually differ from the plaintext bytes
     // (graded as a boolean — the ciphertext itself is IV-randomized, so
     // only its properties are cross-engine facts, never its bytes).
-    "fn_crypto" -> ((s, d) =>
+    Op("fn_crypto", (s, d) =>
       Tables.customer(s, d).select(
         col("c_custkey"),
         expr("CAST(aes_decrypt(aes_encrypt(c_name, '0123456789abcdef'), " +
@@ -93,7 +141,12 @@ object Functions extends Family {
           .as("ct_differs"),
         expr("try_aes_decrypt(aes_encrypt(c_name, '0123456789abcdef'), " +
           "'fedcba9876543210') IS NULL").as("wrong_key_fails_closed"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      // Roundtrip identity and both failure-mode verdicts replayed as
+      // facts about the plaintext.
+      """SELECT c_custkey, c_name AS name_rt,
+        |  TRUE AS ct_differs, TRUE AS wrong_key_fails_closed
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
     // CSV scalar codec (to_csv/from_csv — the row-level twin of the
     // source_csv readers): serialize a struct to one CSV line and parse
@@ -102,7 +155,7 @@ object Functions extends Family {
     // and the parser must unquote losslessly). Integer/string fields
     // only — float-to-string formatting is engine-specific and belongs
     // to the readers' tolerant parse, not an exact-roundtrip contract.
-    "fn_csv" -> ((s, d) =>
+    Op("fn_csv", (s, d) =>
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"),
           concat(col("c_mktsegment"), lit(","), col("c_name")).as("tricky0"))
@@ -115,7 +168,17 @@ object Functions extends Family {
         .select(col("c_custkey"), col("line"), col("p.k").as("k"),
           col("p.seg").as("seg"), col("p.nk").as("nk"),
           col("p.tricky").as("tricky"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      // The CSV line rebuilt by string concat (minimal quoting: only the
+      // field containing the delimiter is quoted) and the parsed fields
+      // replayed from the source columns directly.
+      """SELECT c_custkey,
+        |  c_custkey || ',' || c_mktsegment || ',' || c_nationkey ||
+        |    ',"' || c_mktsegment || ',' || c_name || '"' AS line,
+        |  c_custkey AS k, c_mktsegment AS seg,
+        |  CAST(c_nationkey AS BIGINT) AS nk,
+        |  c_mktsegment || ',' || c_name AS tricky
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
     // Collated string semantics (new in Spark 4): UTF8_LCASE makes
     // comparison, equality, AND grouping case-insensitive at the TYPE
@@ -125,7 +188,7 @@ object Functions extends Family {
     // representative a collated groupBy surfaces ('BUILDING' vs
     // 'building') is first-encounter nondeterministic; everything else
     // (counts, exact cents, CI equality tally) is order-free.
-    "fn_collation" -> ((s, d) => {
+    Op("fn_collation", (s, d) => {
       val mixed = Tables.customer(s, d).select(
         expr("CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment) ELSE c_mktsegment END")
           .as("seg"),
@@ -141,7 +204,20 @@ object Functions extends Family {
         .select(lower(col("segc")).as("seg"), col("n_rows"),
           col("n_raw_spellings"), col("cents"), col("n_eq_ci"))
         .orderBy("seg")
-    }),
+    },
+      // The collation semantics replayed via lower(): a UTF8_LCASE group
+      // key IS lower-case equivalence, so lower()-grouping is the exact
+      // oracle. DuckDB SUM(BIGINT) widens to HUGEINT — cast back.
+      """WITH m AS (SELECT
+        |    CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment)
+        |         ELSE c_mktsegment END AS seg,
+        |    CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents
+        |  FROM customer)
+        |SELECT lower(seg) AS seg, COUNT(*) AS n_rows,
+        |  COUNT(DISTINCT seg) AS n_raw_spellings,
+        |  CAST(SUM(cents) AS BIGINT) AS cents,
+        |  CAST(COUNT(*) FILTER (WHERE lower(seg) = 'building') AS BIGINT) AS n_eq_ci
+        |FROM m GROUP BY lower(seg) ORDER BY seg""".stripMargin),
 
     // ANSI interval TYPES (year-month + day-time, first-class since
     // Spark 3.2): construction via make_ym_interval/make_dt_interval,
@@ -151,7 +227,7 @@ object Functions extends Family {
     // engine-neutral. Anchor 2030-01-01 keeps every difference positive
     // at all scale factors (events end in 2024), so truncation-direction
     // semantics can never diverge between engines.
-    "fn_interval" -> ((s, d) =>
+    Op("fn_interval", (s, d) =>
       Tables.events(s, d).select(
         col("event_id"),
         expr("CAST(extract(DAY FROM (TIMESTAMP '2030-01-01 00:00:00' - ts)) AS INT)").as("dd"),
@@ -161,7 +237,21 @@ object Functions extends Family {
         expr("date_format(ts + make_ym_interval(1, 7), 'yyyy-MM-dd HH:mm:ss')").as("plus_ym"),
         expr("date_format(ts + make_dt_interval(2, 3, 30, 10), 'yyyy-MM-dd HH:mm:ss')").as("plus_dt"),
         expr("CAST((TIMESTAMP '2030-01-01 00:00:00' - ts) DIV INTERVAL 1 HOUR AS BIGINT)").as("tot_hours"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      // Interval components via date_part over the same ts−anchor
+      // difference (both engines truncate the fractional second toward
+      // zero on positive intervals); total hours via exact integer µs
+      // division — DuckDB's date_diff counts calendar-boundary crossings,
+      // NOT elapsed units, so it is deliberately avoided.
+      """SELECT event_id,
+        |  CAST(date_part('day',    TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS dd,
+        |  CAST(date_part('hour',   TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS hh,
+        |  CAST(date_part('minute', TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS mi,
+        |  CAST(date_part('second', TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS ss,
+        |  strftime(ts + INTERVAL 1 YEAR + INTERVAL 7 MONTH, '%Y-%m-%d %H:%M:%S') AS plus_ym,
+        |  strftime(ts + INTERVAL '2 days 3 hours 30 minutes 10 seconds', '%Y-%m-%d %H:%M:%S') AS plus_dt,
+        |  CAST((epoch_us(TIMESTAMP '2030-01-01 00:00:00') - epoch_us(ts)) // 3600000000 AS BIGINT) AS tot_hours
+        |FROM events ORDER BY event_id""".stripMargin),
 
     // Error-safe arithmetic (ANSI-mode pipelines fail loudly; the try_*
     // family turns row-level poison — overflow, /0, bad index — into
@@ -169,7 +259,7 @@ object Functions extends Family {
     // replays each failure condition as an explicit CASE, pinning exactly
     // WHICH rows must null out: bigint-overflow adds/multiplies, double
     // and decimal /0, and an out-of-bounds 1-based array index.
-    "fn_try_arith" -> ((s, d) =>
+    Op("fn_try_arith", (s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         expr("try_add(9223372036854775800L, p_partkey)").as("ta"),
@@ -178,9 +268,21 @@ object Functions extends Family {
         expr("try_divide(CAST(1 AS DECIMAL(10,2)), CAST(p_size % 2 AS DECIMAL(10,0)))")
           .cast("double").as("tdec"),
         expr("try_element_at(array(10, 20, 30), p_size)").as("te"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      // Each failure condition pinned explicitly: the CASE guard must null
+      // out exactly the rows Spark's try_* nulls.
+      """SELECT p_partkey,
+        |  CASE WHEN p_partkey > 7 THEN NULL
+        |       ELSE CAST(9223372036854775800 + p_partkey AS BIGINT) END AS ta,
+        |  CASE WHEN p_size >= 2 THEN NULL
+        |       ELSE CAST(4611686018427387904 * CAST(p_size AS BIGINT) AS BIGINT) END AS tm,
+        |  CASE WHEN p_size = 25 THEN NULL
+        |       ELSE 100.0 / CAST(p_size - 25 AS DOUBLE) END AS td,
+        |  CASE WHEN p_size % 2 = 0 THEN NULL ELSE 1.0 END AS tdec,
+        |  ([10, 20, 30])[p_size] AS te
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    "fn_cast" -> ((s, d) =>
+    Op("fn_cast", (s, d) =>
       Tables.customer(s, d).select(
         col("c_custkey"),
         col("c_acctbal").cast("string").as("bal_str"),
@@ -191,11 +293,21 @@ object Functions extends Family {
         lit("123.456").cast("decimal(18,2)").cast("double").as("dec_c"),
         expr("TRY_CAST('2024-02-30' AS DATE)").as("bad_date"),
         round(col("c_acctbal")).cast("long").as("bal_rl"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      """SELECT c_custkey,
+        |  CAST(c_acctbal AS VARCHAR) AS bal_str,
+        |  CAST(c_custkey AS DOUBLE) AS ck_d,
+        |  CAST(c_custkey AS VARCHAR) AS ck_s,
+        |  TRY_CAST(c_mktsegment AS INT) AS seg_i,
+        |  TRY_CAST(substring(c_name, 10, 9) AS BIGINT) AS name_num,
+        |  CAST(CAST('123.456' AS DECIMAL(18,2)) AS DOUBLE) AS dec_c,
+        |  TRY_CAST('2024-02-30' AS DATE) AS bad_date,
+        |  CAST(round(c_acctbal) AS BIGINT) AS bal_rl
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
     // Array results are emitted space-joined: array cells crash the
     // driver's pandas compare (unhashable ndarray).
-    "fn_array" -> ((s, d) =>
+    Op("fn_array", (s, d) =>
       Tables.documents(s, d)
         .withColumn("t", split(col("text"), " "))
         .select(
@@ -206,14 +318,22 @@ object Functions extends Family {
           array_join(array_sort(array_distinct(col("t"))), " ").as("uniq"),
           element_at(col("t"), 1).as("first_tok"),
           array_join(array_sort(concat(slice(col("t"), 1, 2), array(lit("zz")))), " ").as("plus_zz"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+        |  CAST(len(string_split(text, ' ')) AS INT) AS n_toks,
+        |  list_contains(string_split(text, ' '), 'key') AS has_key,
+        |  array_to_string(string_split(text, ' ')[1:3], ' ') AS first3,
+        |  array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ') AS uniq,
+        |  string_split(text, ' ')[1] AS first_tok,
+        |  array_to_string(list_sort(list_concat(string_split(text, ' ')[1:2], ['zz'])), ' ') AS plus_zz
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // Nested struct columns (the Hive complex-type surface beside array and
     // map): build a two-level struct, then navigate dotted paths back to
     // flat output columns — struct cells themselves can't be emitted (the
     // driver's pandas compare), which mirrors real consumers projecting
     // leaves.
-    "fn_struct" -> ((s, d) =>
+    Op("fn_struct", (s, d) =>
       Tables.customer(s, d)
         .withColumn("cust", struct(
           col("c_custkey").as("key"), col("c_name").as("name"),
@@ -223,9 +343,15 @@ object Functions extends Family {
           col("cust.geo.nk").as("nk"),
           upper(col("cust.name")).as("uname"),
           concat(col("cust.geo.seg"), lit("#"), col("cust.key")).as("tag"))
-        .orderBy("k")),
+        .orderBy("k"),
+      """WITH s AS (SELECT struct_pack(key := c_custkey, name := c_name,
+        |    geo := struct_pack(nk := c_nationkey, seg := c_mktsegment)) AS cust
+        |  FROM customer)
+        |SELECT cust.key AS k, cust.geo.nk AS nk, upper(cust.name) AS uname,
+        |  cust.geo.seg || '#' || CAST(cust.key AS VARCHAR) AS tag
+        |FROM s ORDER BY k""".stripMargin),
 
-    "fn_map" -> ((s, d) =>
+    Op("fn_map", (s, d) =>
       Tables.documents(s, d)
         .withColumn("m", map_from_arrays(
           array(lit("lang"), lit("source")), array(col("lang"), col("source"))))
@@ -235,9 +361,15 @@ object Functions extends Family {
           element_at(col("m"), "lang").as("lang_v"),
           element_at(col("m"), "source").as("src_v"),
           size(col("m")).as("m_size"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+        |  array_to_string(list_sort(map_keys(MAP(['lang','source'], [lang, source]))), ',') AS m_keys,
+        |  MAP(['lang','source'], [lang, source])['lang'][1] AS lang_v,
+        |  MAP(['lang','source'], [lang, source])['source'][1] AS src_v,
+        |  CAST(cardinality(MAP(['lang','source'], [lang, source])) AS INT) AS m_size
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "fn_bitwise" -> ((s, d) =>
+    Op("fn_bitwise", (s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         (col("p_size").bitwiseAND(lit(12))).as("b_and"),
@@ -247,9 +379,18 @@ object Functions extends Family {
         expr("shiftright(p_size, 1)").as("b_shr"),
         expr("CAST(bit_count(p_size) AS INT)").as("b_cnt"),
         expr("~p_size").as("b_not"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey,
+        |  p_size & 12 AS b_and,
+        |  p_size | 5 AS b_or,
+        |  xor(p_size, 21) AS b_xor,
+        |  p_size << 2 AS b_shl,
+        |  p_size >> 1 AS b_shr,
+        |  CAST(bit_count(p_size) AS INT) AS b_cnt,
+        |  ~p_size AS b_not
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
-    "fn_json" -> ((s, d) =>
+    Op("fn_json", (s, d) =>
       Tables.events(s, d)
         .select(col("event_id"), col("props"),
           get_json_object(col("props"), "$.k").cast("int").as("k1"),
@@ -258,28 +399,39 @@ object Functions extends Family {
         .select(col("event_id"), col("k1"), col("k2"),
           expr("json_tuple(props, 'k')").as("k3s"))
         .select(col("event_id"), col("k1"), col("k2"), col("k3s").cast("int").as("k3"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      """SELECT event_id,
+        |  CAST(json_extract(props, '$.k') AS INT) AS k1,
+        |  CAST(json_extract(props, '$.k') AS INT) AS k2,
+        |  CAST(json_extract(props, '$.k') AS INT) AS k3
+        |FROM events ORDER BY event_id""".stripMargin),
 
-    "fn_hash" -> ((s, d) =>
+    Op("fn_hash", (s, d) =>
       Tables.documents(s, d).select(
         col("doc_id"),
         md5(col("text")).as("md5h"),
         sha2(col("text"), 256).as("sha256h"),
         md5(upper(col("text"))).as("md5u"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT doc_id, md5(text) AS md5h, sha256(text) AS sha256h,
+        |  md5(upper(text)) AS md5u
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // Registered Scala UDF, usable from DataFrame & SQL.
-    "udf_scalar" -> ((s, d) => {
+    Op("udf_scalar", (s, d) => {
       s.udf.register("rev_words", (t: String) => t.split(" ").reverse.mkString(" "))
       Tables.part(s, d)
         .select(col("p_partkey"), call_function("rev_words", col("p_name")).as("rev"))
         .orderBy("p_partkey")
-    }),
+    },
+      """SELECT p_partkey,
+        |  array_to_string(list_reverse(string_split(p_name, ' ')), ' ') AS rev
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // Native Catalyst expression with codegen; oracle-checked against
     // DuckDB's list_cosine_similarity (ScalaTest additionally cross-checks
     // a plain-Scala reference implementation).
-    "udf_expr_custom" -> ((s, d) => {
+    Op("udf_expr_custom", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val p = e.where(col("vec_id") < 5)
@@ -288,29 +440,46 @@ object Functions extends Family {
         .select(col("a_id"), col("vec_id").as("b_id"),
           round(call_function("cosine_sim", col("a_emb"), col("emb")), 4).as("sim"))
         .orderBy("a_id", "b_id")
-    }),
+    },
+      // Same cosine as the native expression, via DuckDB's
+      // list_cosine_similarity — the custom Expression is fully
+      // oracle-checkable because both engines fold the dot product in index
+      // order.
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)
+        |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+        |  ROUND(list_cosine_similarity(a.emb, b.emb), 4) AS sim
+        |FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id < 50 AND b.vec_id <> a.vec_id
+        |ORDER BY a_id, b_id""".stripMargin),
 
-    "udtf_explode" -> ((s, d) =>
+    Op("udtf_explode", (s, d) =>
       Tables.documents(s, d)
         .where(col("doc_id") < 20)
         .select(col("doc_id"), posexplode(split(col("text"), " ")))
         .select(col("doc_id"), (col("pos") + 1).as("pos1"), col("col").as("token"))
-        .orderBy("doc_id", "pos1")),
+        .orderBy("doc_id", "pos1"),
+      """SELECT doc_id,
+        |  generate_subscripts(string_split(text, ' '), 1) AS pos1,
+        |  unnest(string_split(text, ' ')) AS token
+        |FROM documents WHERE doc_id < 20 ORDER BY doc_id, pos1""".stripMargin),
 
     // Binary/encoding surface: hex of an integer, base64 of UTF-8 bytes,
     // and a decode(unbase64(...)) round-trip identity.
-    "fn_binary" -> ((s, d) =>
+    Op("fn_binary", (s, d) =>
       Tables.part(s, d)
         .select(col("p_partkey"),
           hex(col("p_partkey")).as("hex_key"),
           base64(col("p_name").cast("binary")).as("name_b64"),
           (decode(unbase64(base64(col("p_name").cast("binary"))), "UTF-8")
             === col("p_name")).as("rt_ok"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey, hex(p_partkey) AS hex_key,
+        |  to_base64(encode(p_name)) AS name_b64,
+        |  decode(from_base64(to_base64(encode(p_name)))) = p_name AS rt_ok
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // Regex surface: extract (group), count, match-test, extract-all.
     // Column-API literals only — an expr() string would re-escape \b.
-    "fn_regex" -> ((s, d) =>
+    Op("fn_regex", (s, d) =>
       Tables.documents(s, d)
         .where(col("doc_id") % 5 === 0)
         .select(col("doc_id"),
@@ -319,12 +488,19 @@ object Functions extends Family {
           col("text").rlike("spark").as("has_spark"),
           array_join(slice(regexp_extract_all(col("text"),
             lit("\\b(scan|sort|merge)\\b"), lit(1)), 1, 5), "|").as("first_ops"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+        |  regexp_extract(text, '^([a-z]+) ([a-z]+)', 2) AS second_tok,
+        |  CAST(len(regexp_extract_all(text, '(key|value)')) AS INT) AS n_kv,
+        |  regexp_matches(text, 'spark') AS has_spark,
+        |  COALESCE(array_to_string(list_slice(
+        |    regexp_extract_all(text, '\b(scan|sort|merge)\b', 1), 1, 5), '|'), '') AS first_ops
+        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin),
 
     // Spark 4 VARIANT type: parse_json → typed variant_get paths (including
     // a missing path → NULL and a nested-array literal). DuckDB replays it
     // through its JSON extraction operators.
-    "fn_variant" -> ((s, d) =>
+    Op("fn_variant", (s, d) =>
       Tables.events(s, d)
         .where(col("event_id") % 100 === 0)
         .select(col("event_id"), expr("parse_json(props)").as("v"))
@@ -333,14 +509,20 @@ object Functions extends Family {
           expr("variant_get(v, '$.k', 'string')").as("k_str"),
           expr("variant_get(v, '$.missing', 'int')").as("k_missing"),
           expr("variant_get(parse_json('[1, {\"a\": 7}]'), '$[1].a', 'int')").as("nested"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      """SELECT event_id,
+        |  CAST(json_extract(props, '$.k') AS INTEGER) AS k_int,
+        |  json_extract_string(props, '$.k') AS k_str,
+        |  CAST(json_extract(props, '$.missing') AS INTEGER) AS k_missing,
+        |  CAST(json_extract('[1, {"a": 7}]', '$[1].a') AS INTEGER) AS nested
+        |FROM events WHERE event_id % 100 = 0 ORDER BY event_id""".stripMargin),
 
     // URL parsing (the log/referrer-analytics workhorse): Spark's
     // `parse_url` (HOST / PATH / QUERY and a keyed query parameter)
     // over deterministic URLs synthesized from document fields; the
     // oracle extracts the same components with anchored regexes. Pure
     // per-row projection, zero shuffle.
-    "fn_url" -> ((s, d) =>
+    Op("fn_url", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           concat(lit("https://"), col("source"), lit(".example.com/"),
@@ -352,14 +534,25 @@ object Functions extends Family {
           expr("parse_url(url, 'PATH')").as("path"),
           expr("parse_url(url, 'QUERY')").as("query"),
           expr("parse_url(url, 'QUERY', 'p')").as("p_param"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """WITH u AS (
+        |  SELECT doc_id,
+        |    'https://' || source || '.example.com/' || lang || '/doc/' || doc_id
+        |      || '?ref=' || source || '&p=' || (doc_id % 7) AS url
+        |  FROM documents)
+        |SELECT doc_id, url,
+        |  regexp_extract(url, '^https://([^/]+)/', 1) AS host,
+        |  regexp_extract(url, '^https://[^/]+(/[^?]*)', 1) AS path,
+        |  regexp_extract(url, '\?(.*)$', 1) AS query,
+        |  regexp_extract(url, '[?&]p=([^&]*)', 1) AS p_param
+        |FROM u ORDER BY doc_id""".stripMargin),
 
     // Array higher-order functions as a graded surface (zip_with /
     // exists / forall / aggregate / array_position) — all codegen-free
     // lambda evaluation but still one linear projection per row; the
     // oracle recomputes the same values with DuckDB's list vocabulary
     // (a deliberate same-semantics-different-operators check).
-    "fn_array_hof" -> ((s, d) =>
+    Op("fn_array_hof", (s, d) =>
       Tables.documents(s, d)
         .withColumn("t", split(col("text"), " "))
         .withColumn("la", expr("transform(t, x -> length(x))"))
@@ -370,7 +563,18 @@ object Functions extends Family {
           expr("exists(t, x -> length(x) >= 7)").as("any_long"),
           expr("forall(t, x -> length(x) <= 12)").as("all_short"),
           expr("array_position(t, 'data')").as("pos_data"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |l AS (SELECT doc_id, t,
+        |        list_transform(t, x -> length(x)) AS la,
+        |        list_reverse(list_transform(t, x -> length(x))) AS lar
+        |      FROM d)
+        |SELECT doc_id, CAST(len(t) AS INT) AS n,
+        |  CAST(list_sum(list_transform(generate_series(1, len(t)), i -> la[i] * lar[i])) AS INT) AS zsum,
+        |  len(list_filter(t, x -> length(x) >= 7)) > 0 AS any_long,
+        |  len(list_filter(t, x -> length(x) > 12)) = 0 AS all_short,
+        |  CAST(list_position(t, 'data') AS BIGINT) AS pos_data
+        |FROM l ORDER BY doc_id""".stripMargin),
 
     // Map higher-order functions (transform_keys / transform_values /
     // map_filter / map_zip_with) — the map twin of fn_array_hof. The map
@@ -378,7 +582,7 @@ object Functions extends Family {
     // construction order on both engines; the oracle recomputes each
     // lambda directly from p_size arithmetic (DuckDB has no map HOFs,
     // and none are needed to pin the semantics).
-    "fn_map_hof" -> ((s, d) =>
+    Op("fn_map_hof", (s, d) =>
       Tables.part(s, d)
         .withColumn("m", map_from_arrays(
           array(lit("a"), lit("b"), lit("c")),
@@ -391,7 +595,13 @@ object Functions extends Family {
           expr("size(map_filter(m, (k, v) -> v % 2 = 0))").as("n_even"),
           expr("array_join(map_values(map_zip_with(m, m, (k, v1, v2) -> v1 + v2)), ',')")
             .as("mz"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey,
+        |  (p_size + 1) || ',' || (2*p_size + 1) || ',' || (3*p_size + 1) AS tv,
+        |  'a' || (p_size % 2) || ',b0,c' || (p_size % 2) AS tk,
+        |  CAST(CASE WHEN p_size % 2 = 0 THEN 3 ELSE 1 END AS INT) AS n_even,
+        |  (2*p_size) || ',' || (4*p_size) || ',' || (6*p_size) AS mz
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // Array generators (sequence / array_repeat / flatten / slice with
     // negative-step sequences) — the constructive side of the array
@@ -402,7 +612,7 @@ object Functions extends Family {
     // and sequence(p_size, 1, -2) would throw. If fixtures are ever
     // regenerated with non-positive sizes, guard with greatest(p_size, 1)
     // in BOTH engines.
-    "fn_array_gen" -> ((s, d) =>
+    Op("fn_array_gen", (s, d) =>
       Tables.part(s, d)
         .withColumn("sq", sequence(lit(1), col("p_size")))
         .select(col("p_partkey"),
@@ -413,13 +623,20 @@ object Functions extends Family {
             .as("flat"),
           expr("array_join(transform(sequence(p_size, 1, -2), x -> CAST(x AS STRING)), ',')")
             .as("desc_odds"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey,
+        |  CAST(p_size AS INT) AS n,
+        |  CAST(p_size * (p_size + 1) / 2 AS BIGINT) AS tri,
+        |  p_brand || ',' || p_brand || ',' || p_brand AS rep3,
+        |  array_to_string(list_concat(list_slice(range(1, p_size + 1), 1, 2), [0]), ',') AS flat,
+        |  array_to_string(list_transform(range(p_size, 0, -2), x -> CAST(x AS VARCHAR)), ',') AS desc_odds
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // The second string tier: split_part / substring_index / overlay /
     // translate / repeat / left / right — the ETL-parsing vocabulary
     // beyond fn_string's core. DuckDB lacks overlay and substring_index;
     // the oracle rebuilds both from substr/list primitives.
-    "fn_string_extras" -> ((s, d) =>
+    Op("fn_string_extras", (s, d) =>
       Tables.part(s, d).select(
         col("p_partkey"),
         expr("split_part(p_name, ' ', 1)").as("sp"),
@@ -428,7 +645,15 @@ object Functions extends Family {
         translate(col("p_type"), "AEO", "aeo").as("tr"),
         expr("repeat(left(p_type, 2), 3)").as("rp"),
         expr("right(p_type, 3)").as("rt"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """SELECT p_partkey,
+        |  split_part(p_name, ' ', 1) AS sp,
+        |  string_split(p_name, ' ')[1] AS si,
+        |  left(p_brand, 1) || 'XX' || substr(p_brand, 4) AS ov,
+        |  translate(p_type, 'AEO', 'aeo') AS tr,
+        |  repeat(left(p_type, 2), 3) AS rp,
+        |  right(p_type, 3) AS rt
+        |FROM part ORDER BY p_partkey""".stripMargin),
 
     // Deterministic namespaced UUID (RFC 4122 v3 — md5-based): the
     // stable-surrogate-key generator a warehouse uses when the SAME
@@ -437,7 +662,7 @@ object Functions extends Family {
     // Layout surgery on the md5 hex: version nibble forced to '3',
     // variant nibble to 8–b via (hex mod 4); verdicts assert the format
     // contract. Pure projection, zero shuffle.
-    "fn_uuid_deterministic" -> ((s, d) =>
+    Op("fn_uuid_deterministic", (s, d) =>
       Tables.customer(s, d)
         .select(col("c_custkey"),
           md5(expr("CAST(concat('graft-ns:', CAST(c_custkey AS STRING)) AS BINARY)")).as("h"))
@@ -452,7 +677,23 @@ object Functions extends Family {
           (length(col("uuid")) === 36).as("len_ok"),
           (substring(col("uuid"), 15, 1) === "3").as("version_ok"),
           expr("substring(uuid, 20, 1) IN ('8', '9', 'a', 'b')").as("variant_ok"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      // Same hex surgery over the same namespaced md5.
+      """WITH h AS (SELECT c_custkey,
+        |    md5('graft-ns:' || CAST(c_custkey AS VARCHAR)) AS h
+        |  FROM customer),
+        |u AS (SELECT c_custkey,
+        |    substring(h, 1, 8) || '-' || substring(h, 9, 4) || '-' ||
+        |    '3' || substring(h, 14, 3) || '-' ||
+        |    (CASE ('0x' || substring(h, 17, 1))::BIGINT % 4
+        |      WHEN 0 THEN '8' WHEN 1 THEN '9' WHEN 2 THEN 'a' ELSE 'b' END) ||
+        |    substring(h, 18, 3) || '-' || substring(h, 21, 12) AS uuid
+        |  FROM h)
+        |SELECT c_custkey, uuid,
+        |  length(uuid) = 36 AS len_ok,
+        |  substring(uuid, 15, 1) = '3' AS version_ok,
+        |  substring(uuid, 20, 1) IN ('8', '9', 'a', 'b') AS variant_ok
+        |FROM u ORDER BY c_custkey""".stripMargin),
 
     // Luhn checksum (ISO/IEC 7812 — the card/IMEI/member-id validity
     // law every PII scrubber and intake validator implements): from the
@@ -461,7 +702,7 @@ object Functions extends Family {
     // verdict, and the CHECK DIGIT that would make key·10+c valid (the
     // issuance direction — computed by the parity-shifted sum). Pure
     // HOF digit algebra, scan-side, no shuffle.
-    "fn_luhn_check" -> ((s, d) => {
+    Op("fn_luhn_check", (s, d) => {
       def luhnSum(parity: Int) =
         s"""aggregate(sequence(1, length(ds)), 0, (acc, i) ->
            |  acc + CASE WHEN (i - 1) % 2 = $parity
@@ -478,7 +719,27 @@ object Functions extends Family {
           (col("luhn_sum") % 10 === 0).as("valid"),
           expr("CAST((10 - shifted_sum % 10) % 10 AS BIGINT)").as("check_digit"))
         .orderBy("c_custkey")
-    }),
+    },
+      // Same right-to-left doubling law and parity-shifted check digit.
+      """WITH s AS (SELECT c_custkey, reverse(CAST(c_custkey AS VARCHAR)) AS ds
+        |  FROM customer),
+        |l AS (SELECT c_custkey,
+        |    CAST(list_sum(list_transform(range(1, length(ds) + 1), i ->
+        |      CASE WHEN (i - 1) % 2 = 1
+        |        THEN CASE WHEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 > 9
+        |          THEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 - 9
+        |          ELSE (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 END
+        |        ELSE ascii(substring(ds, CAST(i AS INT), 1)) - 48 END)) AS BIGINT) AS luhn_sum,
+        |    CAST(list_sum(list_transform(range(1, length(ds) + 1), i ->
+        |      CASE WHEN (i - 1) % 2 = 0
+        |        THEN CASE WHEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 > 9
+        |          THEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 - 9
+        |          ELSE (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 END
+        |        ELSE ascii(substring(ds, CAST(i AS INT), 1)) - 48 END)) AS BIGINT) AS shifted_sum
+        |  FROM s)
+        |SELECT c_custkey, luhn_sum, luhn_sum % 10 = 0 AS valid,
+        |  CAST((10 - shifted_sum % 10) % 10 AS BIGINT) AS check_digit
+        |FROM l ORDER BY c_custkey""".stripMargin),
 
     // XPath extraction (Spark ships the xpath_* family; DuckDB has no
     // XPath, so the oracle replays the EXTRACTION CONTRACT instead: we
@@ -486,7 +747,7 @@ object Functions extends Family {
     // xpath_string must return IS the source column — any parser drift
     // breaks the rollup). Status rides as an attribute to cover the
     // @attr axis as well as element text.
-    "fn_xpath" -> ((s, d) => {
+    Op("fn_xpath", (s, d) => {
       // 1-in-5 sample: the op grades the xpath SURFACE, and the JDK
       // XPath engine is per-row interpreter work (never codegen) —
       // full-table would make this the suite's worst query for no
@@ -537,7 +798,12 @@ object Functions extends Family {
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           max("okey").as("max_key"))
         .orderBy("status")
-    }),
+    },
+      // We authored the XML, so the extracted fields are the columns.
+      """SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
+        |  MAX(o_orderkey) AS max_key
+        |FROM orders WHERE o_orderkey % 5 = 0 GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // str_to_map parsing — the key:value config-string decode every
     // log-ingest layer runs (user agents, feature flags, k=v baggage):
@@ -545,7 +811,7 @@ object Functions extends Family {
     // str_to_map, and the values extracted BY KEY — a delimiter or
     // quoting bug breaks the rollup; the oracle replays the authored
     // arithmetic directly (map iteration order never observed).
-    "fn_str_to_map" -> ((s, d) =>
+    Op("fn_str_to_map", (s, d) =>
       Tables.orders(s, d)
         .select(concat(lit("grp:g"), col("o_orderkey") % 5,
           lit(",cents:"), round(col("o_totalprice") * 100).cast("bigint"),
@@ -557,7 +823,13 @@ object Functions extends Family {
         .groupBy("grp")
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           countDistinct("pr").cast("bigint").as("n_priorities"))
-        .orderBy("grp")),
+        .orderBy("grp"),
+      // The authored kv fields replayed arithmetically.
+      """SELECT 'g' || CAST(o_orderkey % 5 AS VARCHAR) AS grp,
+        |  CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
+        |  CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS n_priorities
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // width_bucket histogram — the SQL-standard equi-width bucketizer:
     // Spark's builtin vs the oracle's pure integer replication
@@ -565,7 +837,7 @@ object Functions extends Family {
     // Exactness note: the builtin computes in DOUBLE, but cents·10 and
     // the span are both integers ≤ 2⁵³, so the quotient floors
     // identically to integer division at every boundary.
-    "fn_width_bucket" -> ((s, d) =>
+    Op("fn_width_bucket", (s, d) =>
       Tables.orders(s, d)
         .select(round(col("o_totalprice") * 100).cast("bigint").as("cents"))
         .withColumn("bucket",
@@ -573,346 +845,8 @@ object Functions extends Family {
         .groupBy("bucket")
         .agg(count(lit(1)).as("n"), min("cents").as("min_cents"),
           max("cents").as("max_cents"))
-        .orderBy("bucket"))
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Same hex surgery over the same namespaced md5.
-    "fn_uuid_deterministic" ->
-      """WITH h AS (SELECT c_custkey,
-        |    md5('graft-ns:' || CAST(c_custkey AS VARCHAR)) AS h
-        |  FROM customer),
-        |u AS (SELECT c_custkey,
-        |    substring(h, 1, 8) || '-' || substring(h, 9, 4) || '-' ||
-        |    '3' || substring(h, 14, 3) || '-' ||
-        |    (CASE ('0x' || substring(h, 17, 1))::BIGINT % 4
-        |      WHEN 0 THEN '8' WHEN 1 THEN '9' WHEN 2 THEN 'a' ELSE 'b' END) ||
-        |    substring(h, 18, 3) || '-' || substring(h, 21, 12) AS uuid
-        |  FROM h)
-        |SELECT c_custkey, uuid,
-        |  length(uuid) = 36 AS len_ok,
-        |  substring(uuid, 15, 1) = '3' AS version_ok,
-        |  substring(uuid, 20, 1) IN ('8', '9', 'a', 'b') AS variant_ok
-        |FROM u ORDER BY c_custkey""".stripMargin,
-
-    // Same right-to-left doubling law and parity-shifted check digit.
-    "fn_luhn_check" ->
-      """WITH s AS (SELECT c_custkey, reverse(CAST(c_custkey AS VARCHAR)) AS ds
-        |  FROM customer),
-        |l AS (SELECT c_custkey,
-        |    CAST(list_sum(list_transform(range(1, length(ds) + 1), i ->
-        |      CASE WHEN (i - 1) % 2 = 1
-        |        THEN CASE WHEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 > 9
-        |          THEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 - 9
-        |          ELSE (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 END
-        |        ELSE ascii(substring(ds, CAST(i AS INT), 1)) - 48 END)) AS BIGINT) AS luhn_sum,
-        |    CAST(list_sum(list_transform(range(1, length(ds) + 1), i ->
-        |      CASE WHEN (i - 1) % 2 = 0
-        |        THEN CASE WHEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 > 9
-        |          THEN (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 - 9
-        |          ELSE (ascii(substring(ds, CAST(i AS INT), 1)) - 48) * 2 END
-        |        ELSE ascii(substring(ds, CAST(i AS INT), 1)) - 48 END)) AS BIGINT) AS shifted_sum
-        |  FROM s)
-        |SELECT c_custkey, luhn_sum, luhn_sum % 10 = 0 AS valid,
-        |  CAST((10 - shifted_sum % 10) % 10 AS BIGINT) AS check_digit
-        |FROM l ORDER BY c_custkey""".stripMargin,
-
-    "fn_string" ->
-      """SELECT p_partkey,
-        |  upper(p_name) AS up, lower(p_type) AS lo,
-        |  trim('  ' || p_brand || '  ') AS tr,
-        |  substring(p_name, 1, 5) AS sub,
-        |  CAST(length(p_name) AS INT) AS len,
-        |  p_brand || '/' || p_type AS cat,
-        |  lpad(CAST(p_size AS VARCHAR), 4, '0') AS pad,
-        |  regexp_replace(p_name, 'a', '@', 'g') AS rrep,
-        |  regexp_extract(p_name, '([a-z]+)$', 1) AS rext,
-        |  CAST(instr(p_name, 'e') AS INT) AS pos_e,
-        |  string_split(p_name, ' ')[1] AS w1,
-        |  p_name LIKE '%bolt%' AS has_bolt
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_date" ->
-      """SELECT o_orderkey,
-        |  CAST(year(o_orderdate) AS INT) AS yr,
-        |  CAST(month(o_orderdate) AS INT) AS mo,
-        |  CAST(quarter(o_orderdate) AS INT) AS qt,
-        |  CAST(dayofweek(o_orderdate) + 1 AS INT) AS dw,
-        |  strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS mon_start,
-        |  strftime(CAST(o_orderdate AS DATE) + 30, '%Y-%m-%d') AS plus30,
-        |  strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus3m,
-        |  strftime(last_day(CAST(o_orderdate AS DATE)), '%Y-%m-%d') AS mon_end,
-        |  CAST(datediff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INT) AS days_to,
-        |  CAST(datediff('month', date_trunc('month', CAST(o_orderdate AS DATE)), DATE '2002-01-01') AS INT) AS mons_to
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "fn_math" ->
-      """SELECT p_partkey,
-        |  round(p_retailprice * 1.1, 2) AS r2,
-        |  CAST(floor(p_retailprice) AS BIGINT) AS fl,
-        |  CAST(ceil(p_retailprice) AS BIGINT) AS ce,
-        |  abs(p_size * -1) AS ab,
-        |  power(p_size, 2) AS pw,
-        |  round(sqrt(p_size), 6) AS sq,
-        |  round(ln(p_retailprice), 6) AS lnp,
-        |  round(log10(p_retailprice), 6) AS l10,
-        |  round(exp(p_size / 10.0), 6) AS ex,
-        |  p_size % 7 AS md,
-        |  CAST(sign(p_size - 20) AS INT) AS sg,
-        |  greatest(p_size, 25) AS gr,
-        |  least(p_size, 25) AS ls
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_conditional" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_totalprice > 300000 THEN 'big'
-        |       WHEN o_totalprice > 100000 THEN 'mid' ELSE 'small' END AS size_cat,
-        |  CASE o_orderstatus WHEN 'F' THEN 'finished' WHEN 'O' THEN 'open' ELSE 'other' END AS st,
-        |  IF(o_totalprice > 250000, 1, 0) AS flag,
-        |  COALESCE(NULLIF(o_orderstatus, 'P'), 'pending') AS co,
-        |  o_orderpriority IN ('1-URGENT', '2-HIGH') AS is_hi
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    // Roundtrip identity and both failure-mode verdicts replayed as
-    // facts about the plaintext.
-    "fn_crypto" ->
-      """SELECT c_custkey, c_name AS name_rt,
-        |  TRUE AS ct_differs, TRUE AS wrong_key_fails_closed
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    // The CSV line rebuilt by string concat (minimal quoting: only the
-    // field containing the delimiter is quoted) and the parsed fields
-    // replayed from the source columns directly.
-    "fn_csv" ->
-      """SELECT c_custkey,
-        |  c_custkey || ',' || c_mktsegment || ',' || c_nationkey ||
-        |    ',"' || c_mktsegment || ',' || c_name || '"' AS line,
-        |  c_custkey AS k, c_mktsegment AS seg,
-        |  CAST(c_nationkey AS BIGINT) AS nk,
-        |  c_mktsegment || ',' || c_name AS tricky
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    // The collation semantics replayed via lower(): a UTF8_LCASE group
-    // key IS lower-case equivalence, so lower()-grouping is the exact
-    // oracle. DuckDB SUM(BIGINT) widens to HUGEINT — cast back.
-    "fn_collation" ->
-      """WITH m AS (SELECT
-        |    CASE WHEN c_custkey % 2 = 0 THEN lower(c_mktsegment)
-        |         ELSE c_mktsegment END AS seg,
-        |    CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer)
-        |SELECT lower(seg) AS seg, COUNT(*) AS n_rows,
-        |  COUNT(DISTINCT seg) AS n_raw_spellings,
-        |  CAST(SUM(cents) AS BIGINT) AS cents,
-        |  CAST(COUNT(*) FILTER (WHERE lower(seg) = 'building') AS BIGINT) AS n_eq_ci
-        |FROM m GROUP BY lower(seg) ORDER BY seg""".stripMargin,
-
-    // Interval components via date_part over the same ts−anchor
-    // difference (both engines truncate the fractional second toward
-    // zero on positive intervals); total hours via exact integer µs
-    // division — DuckDB's date_diff counts calendar-boundary crossings,
-    // NOT elapsed units, so it is deliberately avoided.
-    "fn_interval" ->
-      """SELECT event_id,
-        |  CAST(date_part('day',    TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS dd,
-        |  CAST(date_part('hour',   TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS hh,
-        |  CAST(date_part('minute', TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS mi,
-        |  CAST(date_part('second', TIMESTAMP '2030-01-01 00:00:00' - ts) AS INT) AS ss,
-        |  strftime(ts + INTERVAL 1 YEAR + INTERVAL 7 MONTH, '%Y-%m-%d %H:%M:%S') AS plus_ym,
-        |  strftime(ts + INTERVAL '2 days 3 hours 30 minutes 10 seconds', '%Y-%m-%d %H:%M:%S') AS plus_dt,
-        |  CAST((epoch_us(TIMESTAMP '2030-01-01 00:00:00') - epoch_us(ts)) // 3600000000 AS BIGINT) AS tot_hours
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    // Each failure condition pinned explicitly: the CASE guard must null
-    // out exactly the rows Spark's try_* nulls.
-    "fn_try_arith" ->
-      """SELECT p_partkey,
-        |  CASE WHEN p_partkey > 7 THEN NULL
-        |       ELSE CAST(9223372036854775800 + p_partkey AS BIGINT) END AS ta,
-        |  CASE WHEN p_size >= 2 THEN NULL
-        |       ELSE CAST(4611686018427387904 * CAST(p_size AS BIGINT) AS BIGINT) END AS tm,
-        |  CASE WHEN p_size = 25 THEN NULL
-        |       ELSE 100.0 / CAST(p_size - 25 AS DOUBLE) END AS td,
-        |  CASE WHEN p_size % 2 = 0 THEN NULL ELSE 1.0 END AS tdec,
-        |  ([10, 20, 30])[p_size] AS te
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_cast" ->
-      """SELECT c_custkey,
-        |  CAST(c_acctbal AS VARCHAR) AS bal_str,
-        |  CAST(c_custkey AS DOUBLE) AS ck_d,
-        |  CAST(c_custkey AS VARCHAR) AS ck_s,
-        |  TRY_CAST(c_mktsegment AS INT) AS seg_i,
-        |  TRY_CAST(substring(c_name, 10, 9) AS BIGINT) AS name_num,
-        |  CAST(CAST('123.456' AS DECIMAL(18,2)) AS DOUBLE) AS dec_c,
-        |  TRY_CAST('2024-02-30' AS DATE) AS bad_date,
-        |  CAST(round(c_acctbal) AS BIGINT) AS bal_rl
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "fn_array" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS INT) AS n_toks,
-        |  list_contains(string_split(text, ' '), 'key') AS has_key,
-        |  array_to_string(string_split(text, ' ')[1:3], ' ') AS first3,
-        |  array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ') AS uniq,
-        |  string_split(text, ' ')[1] AS first_tok,
-        |  array_to_string(list_sort(list_concat(string_split(text, ' ')[1:2], ['zz'])), ' ') AS plus_zz
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "fn_struct" ->
-      """WITH s AS (SELECT struct_pack(key := c_custkey, name := c_name,
-        |    geo := struct_pack(nk := c_nationkey, seg := c_mktsegment)) AS cust
-        |  FROM customer)
-        |SELECT cust.key AS k, cust.geo.nk AS nk, upper(cust.name) AS uname,
-        |  cust.geo.seg || '#' || CAST(cust.key AS VARCHAR) AS tag
-        |FROM s ORDER BY k""".stripMargin,
-
-    "fn_map" ->
-      """SELECT doc_id,
-        |  array_to_string(list_sort(map_keys(MAP(['lang','source'], [lang, source]))), ',') AS m_keys,
-        |  MAP(['lang','source'], [lang, source])['lang'][1] AS lang_v,
-        |  MAP(['lang','source'], [lang, source])['source'][1] AS src_v,
-        |  CAST(cardinality(MAP(['lang','source'], [lang, source])) AS INT) AS m_size
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "fn_bitwise" ->
-      """SELECT p_partkey,
-        |  p_size & 12 AS b_and,
-        |  p_size | 5 AS b_or,
-        |  xor(p_size, 21) AS b_xor,
-        |  p_size << 2 AS b_shl,
-        |  p_size >> 1 AS b_shr,
-        |  CAST(bit_count(p_size) AS INT) AS b_cnt,
-        |  ~p_size AS b_not
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_json" ->
-      """SELECT event_id,
-        |  CAST(json_extract(props, '$.k') AS INT) AS k1,
-        |  CAST(json_extract(props, '$.k') AS INT) AS k2,
-        |  CAST(json_extract(props, '$.k') AS INT) AS k3
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "fn_hash" ->
-      """SELECT doc_id, md5(text) AS md5h, sha256(text) AS sha256h,
-        |  md5(upper(text)) AS md5u
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "udf_scalar" ->
-      """SELECT p_partkey,
-        |  array_to_string(list_reverse(string_split(p_name, ' ')), ' ') AS rev
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    // Same cosine as the native expression, via DuckDB's
-    // list_cosine_similarity — the custom Expression is fully
-    // oracle-checkable because both engines fold the dot product in index
-    // order.
-    "udf_expr_custom" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |  ROUND(list_cosine_similarity(a.emb, b.emb), 4) AS sim
-        |FROM e a JOIN e b ON a.vec_id < 5 AND b.vec_id < 50 AND b.vec_id <> a.vec_id
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "udtf_explode" ->
-      """SELECT doc_id,
-        |  generate_subscripts(string_split(text, ' '), 1) AS pos1,
-        |  unnest(string_split(text, ' ')) AS token
-        |FROM documents WHERE doc_id < 20 ORDER BY doc_id, pos1""".stripMargin,
-
-    "fn_binary" ->
-      """SELECT p_partkey, hex(p_partkey) AS hex_key,
-        |  to_base64(encode(p_name)) AS name_b64,
-        |  decode(from_base64(to_base64(encode(p_name)))) = p_name AS rt_ok
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_regex" ->
-      """SELECT doc_id,
-        |  regexp_extract(text, '^([a-z]+) ([a-z]+)', 2) AS second_tok,
-        |  CAST(len(regexp_extract_all(text, '(key|value)')) AS INT) AS n_kv,
-        |  regexp_matches(text, 'spark') AS has_spark,
-        |  COALESCE(array_to_string(list_slice(
-        |    regexp_extract_all(text, '\b(scan|sort|merge)\b', 1), 1, 5), '|'), '') AS first_ops
-        |FROM documents WHERE doc_id % 5 = 0 ORDER BY doc_id""".stripMargin,
-
-    "fn_variant" ->
-      """SELECT event_id,
-        |  CAST(json_extract(props, '$.k') AS INTEGER) AS k_int,
-        |  json_extract_string(props, '$.k') AS k_str,
-        |  CAST(json_extract(props, '$.missing') AS INTEGER) AS k_missing,
-        |  CAST(json_extract('[1, {"a": 7}]', '$[1].a') AS INTEGER) AS nested
-        |FROM events WHERE event_id % 100 = 0 ORDER BY event_id""".stripMargin,
-
-    "fn_url" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'https://' || source || '.example.com/' || lang || '/doc/' || doc_id
-        |      || '?ref=' || source || '&p=' || (doc_id % 7) AS url
-        |  FROM documents)
-        |SELECT doc_id, url,
-        |  regexp_extract(url, '^https://([^/]+)/', 1) AS host,
-        |  regexp_extract(url, '^https://[^/]+(/[^?]*)', 1) AS path,
-        |  regexp_extract(url, '\?(.*)$', 1) AS query,
-        |  regexp_extract(url, '[?&]p=([^&]*)', 1) AS p_param
-        |FROM u ORDER BY doc_id""".stripMargin,
-
-    "fn_array_hof" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |l AS (SELECT doc_id, t,
-        |        list_transform(t, x -> length(x)) AS la,
-        |        list_reverse(list_transform(t, x -> length(x))) AS lar
-        |      FROM d)
-        |SELECT doc_id, CAST(len(t) AS INT) AS n,
-        |  CAST(list_sum(list_transform(generate_series(1, len(t)), i -> la[i] * lar[i])) AS INT) AS zsum,
-        |  len(list_filter(t, x -> length(x) >= 7)) > 0 AS any_long,
-        |  len(list_filter(t, x -> length(x) > 12)) = 0 AS all_short,
-        |  CAST(list_position(t, 'data') AS BIGINT) AS pos_data
-        |FROM l ORDER BY doc_id""".stripMargin,
-
-    "fn_map_hof" ->
-      """SELECT p_partkey,
-        |  (p_size + 1) || ',' || (2*p_size + 1) || ',' || (3*p_size + 1) AS tv,
-        |  'a' || (p_size % 2) || ',b0,c' || (p_size % 2) AS tk,
-        |  CAST(CASE WHEN p_size % 2 = 0 THEN 3 ELSE 1 END AS INT) AS n_even,
-        |  (2*p_size) || ',' || (4*p_size) || ',' || (6*p_size) AS mz
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_array_gen" ->
-      """SELECT p_partkey,
-        |  CAST(p_size AS INT) AS n,
-        |  CAST(p_size * (p_size + 1) / 2 AS BIGINT) AS tri,
-        |  p_brand || ',' || p_brand || ',' || p_brand AS rep3,
-        |  array_to_string(list_concat(list_slice(range(1, p_size + 1), 1, 2), [0]), ',') AS flat,
-        |  array_to_string(list_transform(range(p_size, 0, -2), x -> CAST(x AS VARCHAR)), ',') AS desc_odds
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "fn_string_extras" ->
-      """SELECT p_partkey,
-        |  split_part(p_name, ' ', 1) AS sp,
-        |  string_split(p_name, ' ')[1] AS si,
-        |  left(p_brand, 1) || 'XX' || substr(p_brand, 4) AS ov,
-        |  translate(p_type, 'AEO', 'aeo') AS tr,
-        |  repeat(left(p_type, 2), 3) AS rp,
-        |  right(p_type, 3) AS rt
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    // We authored the XML, so the extracted fields are the columns.
-    "fn_xpath" ->
-      """SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  MAX(o_orderkey) AS max_key
-        |FROM orders WHERE o_orderkey % 5 = 0 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The authored kv fields replayed arithmetically.
-    "fn_str_to_map" ->
-      """SELECT 'g' || CAST(o_orderkey % 5 AS VARCHAR) AS grp,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  CAST(COUNT(DISTINCT o_orderpriority) AS BIGINT) AS n_priorities
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Pure integer replication of the SQL-standard bucket function.
-    "fn_width_bucket" ->
+        .orderBy("bucket"),
+      // Pure integer replication of the SQL-standard bucket function.
       """WITH c AS (SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
         |  FROM orders),
         |b AS (SELECT cents,
@@ -922,6 +856,6 @@ object Functions extends Family {
         |  FROM c)
         |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(COUNT(*) AS BIGINT) AS n,
         |  MIN(cents) AS min_cents, MAX(cents) AS max_cents
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin
+        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

@@ -478,11 +478,11 @@ object IcebergRead extends Family {
     root
   }
 
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // Row-level DELETE through v2 EQUALITY-delete files (the CDC-writer
     // flavor), applied merge-on-read by a distributed key anti-join:
     // snapshot 1003 kills every %14=0 key; 1002 time-travels intact.
-    "sink_iceberg_eq_delete" -> ((s, d) => {
+    Op("sink_iceberg_eq_delete", (s, d) => {
       val root = eqDeleteSnapshot(s, d)
       def rollup(snap: Long): DataFrame =
         readMergeOnRead(s, root, snap)
@@ -493,12 +493,26 @@ object IcebergRead extends Family {
       rollup(1002L).unionByName(rollup(1003L))
         .select("snapshot_id", "o_orderstatus", "n_orders", "total")
         .orderBy("snapshot_id", "o_orderstatus")
-    }),
+    },
+      // Key-membership replay: snapshot 1002 = A (%3=0) + C (%3=2) intact;
+      // 1003 = the same minus every %14=0 key (the equality-delete set).
+      """WITH s1 AS (SELECT CAST(1002 AS BIGINT) AS snapshot_id, o_orderstatus,
+        |    COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2),
+        |s2 AS (SELECT CAST(1003 AS BIGINT) AS snapshot_id, o_orderstatus,
+        |    COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  FROM orders
+        |  WHERE o_orderkey % 3 IN (0, 2) AND o_orderkey % 14 <> 0
+        |  GROUP BY 2)
+        |SELECT * FROM s1 UNION ALL SELECT * FROM s2
+        |ORDER BY snapshot_id, o_orderstatus""".stripMargin),
 
     // Row-level DELETE through v2 position-delete files, applied
     // merge-on-read: snapshot 1003 tombstones file A's %9=0 rows without
     // rewriting A; time travel to 1002 still serves A intact.
-    "sink_iceberg_delete" -> ((s, d) => {
+    Op("sink_iceberg_delete", (s, d) => {
       val root = deleteSnapshot(s, d)
       def rollup(snap: Long): DataFrame =
         readMergeOnRead(s, root, snap)
@@ -509,9 +523,24 @@ object IcebergRead extends Family {
       rollup(1002L).unionByName(rollup(1003L))
         .select("snapshot_id", "o_orderstatus", "n_orders", "total")
         .orderBy("snapshot_id", "o_orderstatus")
-    }),
+    },
+      // File+position membership replay: snapshot 1002 = A (%3=0) and C
+      // (%3=2) intact; snapshot 1003 = the same files with A's %9=0 rows
+      // position-deleted (%9=0 ⊂ %3=0, so the predicate replays exactly).
+      """WITH s1 AS (SELECT CAST(1002 AS BIGINT) AS snapshot_id, o_orderstatus,
+        |    COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2),
+        |s2 AS (SELECT CAST(1003 AS BIGINT) AS snapshot_id, o_orderstatus,
+        |    COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  FROM orders
+        |  WHERE (o_orderkey % 3 = 0 AND o_orderkey % 9 <> 0) OR o_orderkey % 3 = 2
+        |  GROUP BY 2)
+        |SELECT * FROM s1 UNION ALL SELECT * FROM s2
+        |ORDER BY snapshot_id, o_orderstatus""".stripMargin),
 
-    "sink_iceberg_append" -> ((s, d) => {
+    Op("sink_iceberg_append", (s, d) => {
       val root = appendSnapshot(s, d)
       def rollup(snap: Long): DataFrame =
         s.read.parquet(liveFiles(root, Some(snap)): _*)
@@ -526,9 +555,22 @@ object IcebergRead extends Family {
       rollup(1002L).unionByName(rollup(1003L))
         .select("snapshot_id", "o_orderstatus", "n_orders", "total")
         .orderBy("snapshot_id", "o_orderstatus")
-    }),
+    },
+      // File-membership replay of the committed append: snapshot 1002 still
+      // serves A (%3=0) and C (%3=2) — time travel is stable — and 1003
+      // serves A, C, and the restored D (%3=1) = the whole corpus.
+      """WITH s1 AS (SELECT CAST(1002 AS BIGINT) AS snapshot_id, o_orderstatus,
+        |    COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2),
+        |s2 AS (SELECT CAST(1003 AS BIGINT) AS snapshot_id, o_orderstatus,
+        |    COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |  FROM orders GROUP BY 2)
+        |SELECT * FROM s1 UNION ALL SELECT * FROM s2
+        |ORDER BY snapshot_id, o_orderstatus""".stripMargin),
 
-    "source_iceberg_read" -> ((s, d) => {
+    Op("source_iceberg_read", (s, d) => {
       val root = ensureTable(s, d)
       def rollup(snap: Long): DataFrame =
         s.read.parquet(liveFiles(root, Some(snap)): _*)
@@ -543,61 +585,10 @@ object IcebergRead extends Family {
       rollup(1001L).unionByName(rollup(1002L))
         .select("snapshot_id", "o_orderstatus", "n_orders", "total")
         .orderBy("snapshot_id", "o_orderstatus")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Key-membership replay: snapshot 1002 = A (%3=0) + C (%3=2) intact;
-    // 1003 = the same minus every %14=0 key (the equality-delete set).
-    "sink_iceberg_eq_delete" ->
-      """WITH s1 AS (SELECT CAST(1002 AS BIGINT) AS snapshot_id, o_orderstatus,
-        |    COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2),
-        |s2 AS (SELECT CAST(1003 AS BIGINT) AS snapshot_id, o_orderstatus,
-        |    COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |  FROM orders
-        |  WHERE o_orderkey % 3 IN (0, 2) AND o_orderkey % 14 <> 0
-        |  GROUP BY 2)
-        |SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |ORDER BY snapshot_id, o_orderstatus""".stripMargin,
-
-    // File+position membership replay: snapshot 1002 = A (%3=0) and C
-    // (%3=2) intact; snapshot 1003 = the same files with A's %9=0 rows
-    // position-deleted (%9=0 ⊂ %3=0, so the predicate replays exactly).
-    "sink_iceberg_delete" ->
-      """WITH s1 AS (SELECT CAST(1002 AS BIGINT) AS snapshot_id, o_orderstatus,
-        |    COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2),
-        |s2 AS (SELECT CAST(1003 AS BIGINT) AS snapshot_id, o_orderstatus,
-        |    COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |  FROM orders
-        |  WHERE (o_orderkey % 3 = 0 AND o_orderkey % 9 <> 0) OR o_orderkey % 3 = 2
-        |  GROUP BY 2)
-        |SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |ORDER BY snapshot_id, o_orderstatus""".stripMargin,
-
-    // File-membership replay of the committed append: snapshot 1002 still
-    // serves A (%3=0) and C (%3=2) — time travel is stable — and 1003
-    // serves A, C, and the restored D (%3=1) = the whole corpus.
-    "sink_iceberg_append" ->
-      """WITH s1 AS (SELECT CAST(1002 AS BIGINT) AS snapshot_id, o_orderstatus,
-        |    COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2),
-        |s2 AS (SELECT CAST(1003 AS BIGINT) AS snapshot_id, o_orderstatus,
-        |    COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY 2)
-        |SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |ORDER BY snapshot_id, o_orderstatus""".stripMargin,
-    // Replays file membership from the deterministic build: snapshot 1001
-    // serves files A (%3=0) and B (%3=1); snapshot 1002 serves A and C
-    // (%3=2) — B is tombstoned (status DELETED) and must not be read.
-    "source_iceberg_read" ->
+    },
+      // Replays file membership from the deterministic build: snapshot 1001
+      // serves files A (%3=0) and B (%3=1); snapshot 1002 serves A and C
+      // (%3=2) — B is tombstoned (status DELETED) and must not be read.
       """WITH s1 AS (SELECT CAST(1001 AS BIGINT) AS snapshot_id, o_orderstatus,
         |    COUNT(*) AS n_orders,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
@@ -607,6 +598,6 @@ object IcebergRead extends Family {
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
         |  FROM orders WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2)
         |SELECT * FROM s1 UNION ALL SELECT * FROM s2
-        |ORDER BY snapshot_id, o_orderstatus""".stripMargin
+        |ORDER BY snapshot_id, o_orderstatus""".stripMargin)
   )
 }

@@ -1088,12 +1088,12 @@ object Lakehouse extends Family {
     root
   }
 
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // The ACID MERGE: graded output is the post-merge table read through
     // the v2 manifest. Oracle replays the batch from `orders` alone —
     // byte-equality proves the COW rewrite + carried-by-reference files
     // reassemble the exact post-state.
-    "warehouse_snapshot_acid" -> ((s, d) => {
+    Op("warehouse_snapshot_acid", (s, d) => {
       val root = ensureTable(s, d)
       readSnapshot(s, root, 2)
         .groupBy("o_year")
@@ -1101,25 +1101,48 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .orderBy("o_year")
-    }),
+    },
+      // Post-state replay from the source alone: the batch is confined to the
+      // lowest key decile (thr = max//10, same floor division both engines);
+      // updates bump keys ≡0 mod 7 by 100.0, inserts clone keys ≡0 mod 11
+      // shifted +10M.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
+        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Time travel: AFTER v2 is committed, v1 must still read exactly the
     // pre-merge state — snapshot isolation is what makes concurrent
     // readers and reproducible training runs possible on a mutating table.
     // Oracle = the base load replayed from `orders`.
-    "warehouse_time_travel" -> ((s, d) => {
+    Op("warehouse_time_travel", (s, d) => {
       val root = ensureTable(s, d)
       readSnapshot(s, root, 1)
         .groupBy("o_year")
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("total"))
         .orderBy("o_year")
-    }),
+    },
+      // v1 must equal the untouched base load even though v2 exists.
+      """SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Compaction as a SNAPSHOT COMMIT: v3 bin-packs v2's files and must be
     // invisible to queries — the oracle is v2's post-state, LakehouseSpec
     // asserts the file count dropped and v2 stayed readable.
-    "warehouse_snapshot_compact" -> ((s, d) => {
+    Op("warehouse_snapshot_compact", (s, d) => {
       val root = ensureCompacted(s, d)
       readSnapshot(s, root, 3)
         .groupBy("o_year")
@@ -1127,12 +1150,28 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .orderBy("o_year")
-    }),
+    },
+      // Compaction must be invisible: v3 reads v2's exact post-state.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
+        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Row-level DELETE, COW + stats-pruned like MERGE: v4 drops keys
     // ≡0 mod 13 inside the decile. Oracle = v2's post-state minus exactly
     // those rows; LakehouseSpec asserts pruning and that v3 stays readable.
-    "warehouse_snapshot_delete" -> ((s, d) => {
+    Op("warehouse_snapshot_delete", (s, d) => {
       val root = ensureDeleted(s, d)
       readSnapshot(s, root, 4)
         .groupBy("o_year")
@@ -1140,7 +1179,26 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .orderBy("o_year")
-    }),
+    },
+      // v2 post-state minus the deleted keys (≡0 mod 13 inside the decile;
+      // the +10M inserted keys are outside the decile so none are deleted).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
+        |FROM post
+        |WHERE NOT (o_orderkey % 13 = 0 AND o_orderkey <= (SELECT t FROM thr))
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Manifest statistics — SHOW STATS answered from METADATA: per
     // snapshot version, row count and key range come from the manifest's
@@ -1148,7 +1206,7 @@ object Lakehouse extends Family {
     // this is the difference between an instant answer and a table
     // scan). The oracle recomputes the same numbers the hard way, from
     // the data — proving the metadata is truthful.
-    "warehouse_manifest_stats" -> ((s, d) => {
+    Op("warehouse_manifest_stats", (s, d) => {
       val root = ensureTable(s, d)
       import s.implicits._
       Seq(1, 2).map { v =>
@@ -1156,14 +1214,27 @@ object Lakehouse extends Family {
         (v.toLong, m.map(_.rows).sum, m.map(_.minKey).min, m.map(_.maxKey).max)
       }.toDF("version", "n_rows", "min_key", "max_key")
         .orderBy("version")
-    }),
+    },
+      // The same stats recomputed from the DATA: v1 = the base load, v2 =
+      // base + the insert batch (updates don't change counts or the key
+      // range; inserts extend the max to the shifted domain).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |ins AS (SELECT o_orderkey + 10000000 AS k FROM orders
+        |        WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT CAST(1 AS BIGINT) AS version, COUNT(*) AS n_rows,
+        |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
+        |FROM orders
+        |UNION ALL
+        |SELECT 2, (SELECT COUNT(*) FROM orders) + (SELECT COUNT(*) FROM ins),
+        |  (SELECT MIN(o_orderkey) FROM orders), (SELECT MAX(k) FROM ins)
+        |ORDER BY version""".stripMargin),
 
     // Shallow clone: the graded output is the DIVERGED clone (source's
     // live state + the clone-only append) — while the clone's v1 copied
     // zero data files and the source table is byte-untouched
     // (LakehouseSpec asserts both). Oracle = the ACID post-state plus
     // the replayed clone batch.
-    "warehouse_clone_shallow" -> ((s, d) => {
+    Op("warehouse_clone_shallow", (s, d) => {
       val root = ensureCloned(s, d)
       readSnapshot(s, root, 2)
         .groupBy("o_year")
@@ -1171,13 +1242,35 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 90000000L, 1L).otherwise(0L)).as("n_cloned"))
         .orderBy("o_year")
-    }),
+    },
+      // ACID post-state plus the clone-only batch (base keys ≡0 mod 107
+      // shifted +90M), replayed from `orders`.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+        |clonebatch AS (
+        |  SELECT o_orderkey + 90000000 AS o_orderkey, o_totalprice, o_year
+        |  FROM post WHERE o_orderkey % 107 = 0 AND o_orderkey < 10000000),
+        |allrows AS (SELECT * FROM post UNION ALL SELECT * FROM clonebatch)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 90000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_cloned
+        |FROM allrows
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Merge-on-read DELETE: the graded output is the post-DV state read
     // through the (file, position) anti-join — while ZERO data files were
     // rewritten (LakehouseSpec asserts byte identity of every v3 file with
     // its v2 twin). Oracle = the COW post-state minus keys ≡0 mod 17.
-    "warehouse_snapshot_dv" -> ((s, d) => {
+    Op("warehouse_snapshot_dv", (s, d) => {
       val root = ensureDvTable(s, d)
       readSnapshotMor(s, root, 3)
         .groupBy("o_year")
@@ -1185,13 +1278,32 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .orderBy("o_year")
-    }),
+    },
+      // Post-merge state minus the DV'd keys (≡0 mod 17), replayed from
+      // `orders` — identical content read through zero rewritten files.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
+        |FROM post
+        |WHERE o_orderkey % 17 <> 0
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // DV purge: v4 folds the sidecar into clean files (rewriting ONLY the
     // files the DV names) and must be invisible to queries — the oracle is
     // byte-for-byte v3's, read through the same MOR path (which now takes
     // the no-sidecar fast branch).
-    "warehouse_dv_purge" -> ((s, d) => {
+    Op("warehouse_dv_purge", (s, d) => {
       val root = ensureDvPurged(s, d)
       readSnapshotMor(s, root, 4)
         .groupBy("o_year")
@@ -1199,14 +1311,32 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .orderBy("o_year")
-    }),
+    },
+      // The purge is invisible: v4 reads exactly v3's content.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
+        |FROM post
+        |WHERE o_orderkey % 17 <> 0
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Partition-spec evolution: a year-scoped query plans against the
     // two-spec manifest — spec-2 files prune by their year stats, spec-1
     // files (no year info) are all kept and filtered by the residual
     // predicate. LakehouseSpec asserts the plan actually dropped spec-2
     // files while keeping every spec-1 file.
-    "warehouse_partition_evolve" -> ((s, d) => {
+    Op("warehouse_partition_evolve", (s, d) => {
       val root = ensureSpecEvolved(s, d)
       val files = pruneFilesByKey2(root, 2, 1995L, 1995L)
       s.read.parquet(files.map(_.path): _*)
@@ -1214,7 +1344,18 @@ object Lakehouse extends Family {
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 70000000L, 1L).otherwise(0L)).as("n_newspec"))
-    }),
+    },
+      // Both specs' rows for the queried year, replayed from `orders`.
+      """WITH src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT * FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 70000000, o_year, o_totalprice
+        |  FROM src WHERE o_orderkey % 97 = 0)
+        |SELECT COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 70000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_newspec
+        |FROM post WHERE o_year = 1995""".stripMargin),
 
     // CDC / incremental consumption: the change rows between two snapshots,
     // computed from the MANIFEST DIFF — files shared by v1 and v2 were
@@ -1224,7 +1365,7 @@ object Lakehouse extends Family {
     // files), never the table — the changelog a downstream training
     // pipeline tails instead of re-scanning the corpus. Row-level output:
     // every update carries its new value, every insert its row.
-    "warehouse_snapshot_changes" -> ((s, d) => {
+    Op("warehouse_snapshot_changes", (s, d) => {
       val root = ensureTable(s, d)
       val v1 = manifest(root, 1)
       val v2 = manifest(root, 2)
@@ -1236,7 +1377,18 @@ object Lakehouse extends Family {
         .withColumn("change_type",
           when(col("o_orderkey") >= 10000000L, lit("insert")).otherwise(lit("update")))
         .orderBy("o_orderkey")
-    }),
+    },
+      // The changelog replayed from the source: updates with their new
+      // values, inserts with their rows (keys ≡0 mod 77 emit both).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders)
+        |SELECT o_orderkey, o_year, o_totalprice + 100.0 AS o_totalprice,
+        |  'update' AS change_type
+        |FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |UNION ALL
+        |SELECT o_orderkey + 10000000, o_year, o_totalprice, 'insert'
+        |FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0
+        |ORDER BY o_orderkey""".stripMargin),
 
     // Governance: column masking + row-level security as a view contract —
     // the Ranger/warehouse-policy surface a Hive service enforces. The
@@ -1245,7 +1397,7 @@ object Lakehouse extends Family {
     // coarsening), and a row filter hiding an entire segment. Pure plan
     // macro: pushdown/pruning act through it, zero storage, and consumers
     // cannot name the hidden columns at all.
-    "warehouse_masked_view" -> ((s, d) => {
+    Op("warehouse_masked_view", (s, d) => {
       Tables.customer(s, d).createOrReplaceTempView("graft_cust_raw")
       s.sql(
         """CREATE OR REPLACE TEMPORARY VIEW graft_cust_masked AS
@@ -1260,14 +1412,22 @@ object Lakehouse extends Family {
         .agg(count(lit(1)).as("n_cust"),
           countDistinct(col("c_name_masked")).as("n_masked_names"))
         .orderBy("c_mktsegment", "acctbal_bucket")
-    }),
+    },
+      // The masked-view rollup replayed inline — the policy (mask, bucket,
+      // row filter) must transform identically in both engines.
+      """SELECT c_mktsegment,
+        |  CAST(FLOOR(c_acctbal / 100) * 100 AS DOUBLE) AS acctbal_bucket,
+        |  COUNT(*) AS n_cust,
+        |  COUNT(DISTINCT CONCAT('Customer#***', RIGHT(c_name, 3))) AS n_masked_names
+        |FROM customer WHERE c_mktsegment <> 'AUTOMOBILE'
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // READ-side data skipping: a key-range query planned against manifest
     // stats reads only the files whose [min,max] can hold the range —
     // LakehouseSpec asserts the pruned file set is a strict minority of
     // the snapshot. The range (4*thr, 5*thr] sits above the merge decile
     // and below the insert keys, so the oracle is the plain base filter.
-    "warehouse_snapshot_skip" -> ((s, d) => {
+    Op("warehouse_snapshot_skip", (s, d) => {
       val root = ensureTable(s, d)
       val thr = manifest(root, 1).map(_.maxKey).max / 10L
       val lo = 4 * thr; val hi = 5 * thr
@@ -1278,7 +1438,16 @@ object Lakehouse extends Family {
         .agg(count(lit(1)).as("n_rows"),
           sum(dec(col("o_totalprice"))).cast("double").as("total"))
         .orderBy("o_year")
-    }),
+    },
+      // Stats-skipped read ≡ plain filter over the base: the range sits
+      // above the merge decile (no updates) and below +10M (no inserts).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders)
+        |SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM orders
+        |WHERE o_orderkey > 4 * (SELECT t FROM thr)
+        |  AND o_orderkey <= 5 * (SELECT t FROM thr)
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Point-lookup pruning on an UNCLUSTERED key via the bloom sidecar:
     // the probe customer's orders are scattered across the o_orderkey-
@@ -1287,7 +1456,7 @@ object Lakehouse extends Family {
     // secondary-index verb beside range skipping (min/max), key2 stats
     // (recluster) and z-order. The residual equality predicate still
     // applies: blooms admit false positives, never false negatives.
-    "warehouse_snapshot_bloom" -> ((s, d) => {
+    Op("warehouse_snapshot_bloom", (s, d) => {
       val root = ensureBloomTable(s, d)
       val probe = readSnapshot(s, root, 2)
         .agg(min("o_custkey")).collect()(0).getLong(0)
@@ -1299,7 +1468,13 @@ object Lakehouse extends Family {
         .where(col("o_custkey") === probe)
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
-    }),
+    },
+      // The bloom table is v1 content (no merge batch); the lookup result
+      // must equal the plain filter — membership pruning is invisible.
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders
+        |WHERE o_custkey = (SELECT MIN(o_custkey) FROM orders)
+        |ORDER BY o_orderkey""".stripMargin),
 
     // Re-clustering restores data skipping on a DRIFTED query key: the
     // graded read prunes the re-sorted snapshot's files on the SECOND
@@ -1307,7 +1482,7 @@ object Lakehouse extends Family {
     // the require IS the skipping contract), applies the residual year
     // predicate, and must still read v2's exact post-state content (the
     // rewrite is content-invisible, like compaction).
-    "warehouse_snapshot_recluster" -> ((s, d) => {
+    Op("warehouse_snapshot_recluster", (s, d) => {
       val root = ensureReclustered(s, d)
       val live = manifest(root, 3)
       val hit = pruneFilesByKey2(root, 3, 1997L, 1997L)
@@ -1319,13 +1494,29 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .select(lit(1997).as("o_year"), col("n_rows"), col("total"), col("n_inserted"))
-    }),
+    },
+      // The re-clustered snapshot reads v2's post-state, filtered to 1997.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT CAST(1997 AS INT) AS o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
+        |FROM post WHERE o_year = 1997""".stripMargin),
 
     // Optimistic concurrency: two writers planned against one snapshot;
     // the loser's CAS is rejected and it rebases onto the winner before
     // landing. Graded output = the final table holding BOTH batches —
     // proof no committed write was lost through the conflict.
-    "warehouse_snapshot_conflict" -> ((s, d) => {
+    Op("warehouse_snapshot_conflict", (s, d) => {
       val root = ensureConflicted(s, d)
       readSnapshot(s, root, 4)
         .groupBy("o_year")
@@ -1335,14 +1526,42 @@ object Lakehouse extends Family {
             .otherwise(0L)).as("n_writer_a"),
           sum(when(col("o_orderkey") >= 30000000L, 1L).otherwise(0L)).as("n_writer_b"))
         .orderBy("o_year")
-    }),
+    },
+      // Both writers' batches must survive the conflict: final state = v2
+      // post-state + A's rows (+20M, keys ≡0 mod 97 of what A read) + B's
+      // rows (+30M, keys ≡0 mod 89).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+        |final AS (
+        |  SELECT * FROM post
+        |  UNION ALL
+        |  SELECT o_orderkey + 20000000, o_totalprice, o_year
+        |  FROM post WHERE o_orderkey % 97 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey + 30000000, o_totalprice, o_year
+        |  FROM post WHERE o_orderkey % 89 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 20000000 AND o_orderkey < 30000000
+        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_writer_a,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 30000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_writer_b
+        |FROM final GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // ROLLBACK: v3 restores v1's state by re-committing v1's manifest —
     // pure metadata, zero data movement (LakehouseSpec asserts the file
     // sets are identical and nothing was written). Oracle = the untouched
     // base load, even though the "bad" v2 merge still exists and stays
     // readable for forensics.
-    "warehouse_snapshot_rollback" -> ((s, d) => {
+    Op("warehouse_snapshot_rollback", (s, d) => {
       val root = ensureRolledBack(s, d)
       readSnapshot(s, root, 3)
         .groupBy("o_year")
@@ -1350,7 +1569,14 @@ object Lakehouse extends Family {
           sum(dec(col("o_totalprice"))).cast("double").as("total"),
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_merge_rows"))
         .orderBy("o_year")
-    }),
+    },
+      // Rollback restores the untouched base load (the v2 merge never
+      // happened as far as v3 readers are concerned): zero rows at +10M
+      // keys, totals equal to orders.
+      """SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(0 AS BIGINT) AS n_merge_rows
+        |FROM orders GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Branches + tags: the graded read walks all three refs — main
     // (CURRENT, must NOT see the branch write), the dev branch head (must
@@ -1362,7 +1588,7 @@ object Lakehouse extends Family {
     // catalog pointer (never the per-table CURRENTs): the 1997 rows
     // appear in archive and are gone from hot — exactly once, across
     // tables, from one atomic swap.
-    "warehouse_multi_table_txn" -> ((s, d) => {
+    Op("warehouse_multi_table_txn", (s, d) => {
       val base = ensureMultiTxn(s, d)
       val (va, vb) = catVersions(base)
       def roll(root: String, v: Int, label: String) =
@@ -1374,13 +1600,26 @@ object Lakehouse extends Family {
       roll(s"$base/hot", va, "hot")
         .unionAll(roll(s"$base/archive", vb, "archive"))
         .orderBy("tbl", "o_year")
-    }),
+    },
+      // Three refs over one file pool: main and the release tag read the v2
+      // post-state (the branch write is invisible to them); dev reads the
+      // post-state plus its append batch (post keys ≡0 mod 103, +50M).
+      // The cross-table move replayed: post-txn hot = 1998+, archive =
+      // everything through 1997.
+      """WITH src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice
+        |  FROM orders),
+        |lab AS (SELECT CASE WHEN o_year >= 1998 THEN 'hot' ELSE 'archive' END AS tbl,
+        |    o_year, o_totalprice
+        |  FROM src)
+        |SELECT tbl, o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM lab GROUP BY tbl, o_year ORDER BY tbl, o_year""".stripMargin),
 
     // Orphan scan + removal, then the graded proof: the table's post-
     // state is byte-identical to the pre-scan snapshot (cleanup touched
     // ONLY unreferenced files), the orphan is physically gone, and every
     // live manifest entry still exists.
-    "warehouse_orphan_scan" -> ((s, d) => {
+    Op("warehouse_orphan_scan", (s, d) => {
       val root = ensureOrphaned(s, d)
       val cur = currentVersion(root).get
       val live = (1 to cur).flatMap(v => manifest(root, v))
@@ -1413,7 +1652,24 @@ object Lakehouse extends Family {
         .withColumn("orphan_gone", lit(orphanGone))
         .withColumn("live_intact", lit(liveIntact))
         .orderBy("o_year")
-    }),
+    },
+      // Cleanup is invisible to the table: the post-state is the ordinary
+      // v2 replay, and both verdicts must be TRUE.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  TRUE AS orphan_gone, TRUE AS live_intact
+        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // DESCRIBE HISTORY from METADATA ONLY: the commit log (version, row
     // count, rows added) assembled from the manifest chain's per-file
@@ -1422,7 +1678,7 @@ object Lakehouse extends Family {
     // the data, proving the metadata ledger truthful — the same
     // metadata-vs-data contract as warehouse_manifest_stats, extended
     // across the whole history.
-    "warehouse_history" -> ((s, d) => {
+    Op("warehouse_history", (s, d) => {
       // own prefix: the shared snap_tbl root gains v3..v5 when the
       // compaction/delete/evolution ops run first in the same JVM —
       // the ledger op must not be order-dependent on its siblings
@@ -1435,12 +1691,24 @@ object Lakehouse extends Family {
       }
       s.createDataFrame(hist).toDF("version", "n_rows", "rows_added")
         .orderBy("version")
-    }),
+    },
+      // The manifest ledger recomputed from data: v1 = the base load, v2
+      // adds exactly the mod-11 insert batch (updates are count-neutral).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |b AS (SELECT COUNT(*) AS c FROM orders),
+        |i AS (SELECT COUNT(*) AS c FROM orders
+        |      WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT CAST(1 AS BIGINT) AS version, CAST(b.c AS BIGINT) AS n_rows,
+        |  CAST(b.c AS BIGINT) AS rows_added FROM b
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT), CAST(b.c + i.c AS BIGINT), CAST(i.c AS BIGINT)
+        |FROM b, i
+        |ORDER BY version""".stripMargin),
 
     // Post-publish main: the staged batch is live exactly once, the
     // audit verdicts ride along as constants the oracle re-asserts, and
     // published_version pins the fast-forward actually happening.
-    "warehouse_wap_publish" -> ((s, d) => {
+    Op("warehouse_wap_publish", (s, d) => {
       val root = ensureWap(s, d)
       val cur = currentVersion(root).get
       readSnapshot(s, root, cur)
@@ -1451,21 +1719,64 @@ object Lakehouse extends Family {
             .as("n_staged"))
         .withColumn("published_version", lit(cur.toLong))
         .orderBy("o_year")
-    }),
+    },
+      // The v2 post-state (same `post` replay as branch_tag) plus the
+      // mod-101 staged batch — its presence in MAIN is the publish proof.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+        |pub AS (
+        |  SELECT * FROM post
+        |  UNION ALL
+        |  SELECT o_orderkey + 70000000, o_totalprice, o_year
+        |  FROM post WHERE o_orderkey % 101 = 0 AND o_orderkey < 10000000)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 70000000 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_staged,
+        |  CAST(3 AS BIGINT) AS published_version
+        |FROM pub GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // The full post-merge table WITH its lineage metadata: row ids are
     // stable through the COW rewrite, updates carry _modified_v=2 with
     // their original _created_v, inserts stamp both at 2.
-    "warehouse_row_lineage" -> ((s, d) => {
+    Op("warehouse_row_lineage", (s, d) => {
       val root = ensureLineage(s, d)
       readSnapshot(s, root, 2)
         .select(col("_row_id").as("row_id"), col("o_orderkey"), col("o_year"),
           col("o_totalprice"), col("_created_v").as("created_v"),
           col("_modified_v").as("modified_v"))
         .orderBy("row_id")
-    }),
+    },
+      // Row-by-row lineage replay: ids equal the ingest keys (stable),
+      // modified_v bumps exactly on the mod-7 update predicate, inserts
+      // stamp created_v = modified_v = 2.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |rws AS (
+        |  SELECT o_orderkey AS row_id, o_orderkey, o_year,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    CAST(1 AS BIGINT) AS created_v,
+        |    CAST(CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN 2 ELSE 1 END AS BIGINT) AS modified_v
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_orderkey + 10000000, o_year, o_totalprice,
+        |    CAST(2 AS BIGINT), CAST(2 AS BIGINT)
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT row_id, o_orderkey, o_year, o_totalprice, created_v, modified_v
+        |FROM rws ORDER BY row_id""".stripMargin),
 
-    "warehouse_branch_tag" -> ((s, d) => {
+    Op("warehouse_branch_tag", (s, d) => {
       val root = ensureBranched(s, d)
       def rollup(df: DataFrame, label: String): DataFrame = df
         .groupBy("o_year")
@@ -1479,7 +1790,32 @@ object Lakehouse extends Family {
         .unionAll(rollup(readSnapshot(s, root, readRef(root, "dev")), "dev"))
         .unionAll(rollup(readSnapshot(s, root, readRef(root, "release")), "tag_release"))
         .orderBy("branch", "o_year")
-    }),
+    },
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+        |dev AS (
+        |  SELECT * FROM post
+        |  UNION ALL
+        |  SELECT o_orderkey + 50000000, o_totalprice, o_year
+        |  FROM post WHERE o_orderkey % 103 = 0),
+        |refs AS (
+        |  SELECT 'main' AS branch, * FROM post
+        |  UNION ALL SELECT 'dev' AS branch, * FROM dev
+        |  UNION ALL SELECT 'tag_release' AS branch, * FROM post)
+        |SELECT branch, o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 50000000 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_branch_only
+        |FROM refs GROUP BY branch, o_year ORDER BY branch, o_year""".stripMargin),
 
     // Snapshot expiration + VACUUM: after dropping v1 and deleting its
     // orphaned COW pre-images, the CURRENT snapshot must still read its
@@ -1487,7 +1823,7 @@ object Lakehouse extends Family {
     // proof), and the two verdict columns certify the GC did its work:
     // every live manifest entry still exists on disk, and the expired
     // manifest is gone (time travel below the floor now correctly fails).
-    "warehouse_snapshot_expire" -> ((s, d) => {
+    Op("warehouse_snapshot_expire", (s, d) => {
       val root = ensureExpired(s, d)
       val cur = currentVersion(root).get
       val liveIntact = manifest(root, cur)
@@ -1501,7 +1837,26 @@ object Lakehouse extends Family {
         .withColumn("live_intact", lit(liveIntact))
         .withColumn("expired_gone", lit(expiredGone))
         .orderBy("o_year")
-    }),
+    },
+      // Expiration is content-invisible to the retained snapshot: the
+      // CURRENT rollup is v2's exact post-state; the verdict columns must
+      // both come back TRUE (no live file lost, expired manifest dropped).
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted,
+        |  TRUE AS live_intact, TRUE AS expired_gone
+        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Incremental view maintenance driven by the CDC feed: the consumer
     // holds a materialized per-year rollup of v1 and advances it to v2 by
@@ -1513,7 +1868,7 @@ object Lakehouse extends Family {
     // At 100 TB the consumer reads O(changed files) + its own MV instead
     // of re-scanning the table: the standing pattern for every downstream
     // rollup a training pipeline keeps warm.
-    "warehouse_cdc_apply" -> ((s, d) => {
+    Op("warehouse_cdc_apply", (s, d) => {
       val root = ensureTable(s, d)
       val v1 = manifest(root, 1)
       val v2 = manifest(root, 2)
@@ -1543,7 +1898,23 @@ object Lakehouse extends Family {
             .cast("double").as("total"))
         .where(col("n_rows") > 0)
         .orderBy("o_year")
-    }),
+    },
+      // The incrementally-maintained MV must equal the full v2 recompute —
+      // the oracle IS the full recompute, so equality is the grade.
+      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+        |post AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+        |    o_year
+        |  FROM src
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+        |SELECT o_year, COUNT(*) AS n_rows,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin),
 
     // Z-order data skipping on the SECOND dimension: a custkey point-range
     // query plans against v2's per-file [minKey2,maxKey2], keeps a strict
@@ -1552,7 +1923,7 @@ object Lakehouse extends Family {
     // asserted in LakehouseSpec), applies the residual filter, and must
     // read exactly the base table's matching rows (the rewrite is
     // content-invisible).
-    "warehouse_snapshot_zorder" -> ((s, d) => {
+    Op("warehouse_snapshot_zorder", (s, d) => {
       val root = ensureZordered(s, d)
       val live = manifest(root, 2)
       val thr2 = live.map(_.maxKey2).max / 10L
@@ -1567,448 +1938,9 @@ object Lakehouse extends Family {
           countDistinct(col("o_custkey")).as("n_cust"),
           sum(dec(col("o_totalprice"))).cast("double").as("total"))
         .orderBy("o_year")
-    }),
-
-    // Schema evolution: v5 adds `o_channel` via an appended backfill file;
-    // pre-evolution files carry by reference (LakehouseSpec asserts zero
-    // rewrites) and read back with the column NULL -> 'base'.
-    "warehouse_snapshot_evolve" -> ((s, d) => {
-      val root = ensureEvolved(s, d)
-      readSnapshotMerged(s, root, 5)
-        .groupBy(col("o_year"), coalesce(col("o_channel"), lit("base")).as("channel"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(dec(col("o_totalprice"))).cast("double").as("total"))
-        .orderBy("o_year", "channel")
-    }),
-
-    // Exactly-once streaming ingest into the ACID table: an AvailableNow
-    // file stream appends each micro-batch via a ledger-carrying snapshot
-    // commit; the graded read aggregates the TABLE. Real oracle (not
-    // golden): the streamed content must equal the batch aggregate over
-    // events — the streaming ≡ batch contract with a lakehouse in between.
-    "stream_lakehouse_sink" -> ((s, d) => {
-      val root = ensureStreamTable(s, d)
-      readSnapshot(s, root, currentVersion(root).get)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(col("value_cents")).as("value_cents"))
-        .orderBy("event_type")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Post-state replay from the source alone: the batch is confined to the
-    // lowest key decile (thr = max//10, same floor division both engines);
-    // updates bump keys ≡0 mod 7 by 100.0, inserts clone keys ≡0 mod 11
-    // shifted +10M.
-    "warehouse_snapshot_acid" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // v1 must equal the untouched base load even though v2 exists.
-    "warehouse_time_travel" ->
-      """SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Compaction must be invisible: v3 reads v2's exact post-state.
-    "warehouse_snapshot_compact" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // v2 post-state minus the deleted keys (≡0 mod 13 inside the decile;
-    // the +10M inserted keys are outside the decile so none are deleted).
-    "warehouse_snapshot_delete" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM post
-        |WHERE NOT (o_orderkey % 13 = 0 AND o_orderkey <= (SELECT t FROM thr))
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // The same stats recomputed from the DATA: v1 = the base load, v2 =
-    // base + the insert batch (updates don't change counts or the key
-    // range; inserts extend the max to the shifted domain).
-    "warehouse_manifest_stats" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |ins AS (SELECT o_orderkey + 10000000 AS k FROM orders
-        |        WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT CAST(1 AS BIGINT) AS version, COUNT(*) AS n_rows,
-        |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-        |FROM orders
-        |UNION ALL
-        |SELECT 2, (SELECT COUNT(*) FROM orders) + (SELECT COUNT(*) FROM ins),
-        |  (SELECT MIN(o_orderkey) FROM orders), (SELECT MAX(k) FROM ins)
-        |ORDER BY version""".stripMargin,
-
-    // ACID post-state plus the clone-only batch (base keys ≡0 mod 107
-    // shifted +90M), replayed from `orders`.
-    "warehouse_clone_shallow" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
-        |clonebatch AS (
-        |  SELECT o_orderkey + 90000000 AS o_orderkey, o_totalprice, o_year
-        |  FROM post WHERE o_orderkey % 107 = 0 AND o_orderkey < 10000000),
-        |allrows AS (SELECT * FROM post UNION ALL SELECT * FROM clonebatch)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 90000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_cloned
-        |FROM allrows
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Post-merge state minus the DV'd keys (≡0 mod 17), replayed from
-    // `orders` — identical content read through zero rewritten files.
-    "warehouse_snapshot_dv" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM post
-        |WHERE o_orderkey % 17 <> 0
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // The purge is invisible: v4 reads exactly v3's content.
-    "warehouse_dv_purge" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM post
-        |WHERE o_orderkey % 17 <> 0
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Both specs' rows for the queried year, replayed from `orders`.
-    "warehouse_partition_evolve" ->
-      """WITH src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT * FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 70000000, o_year, o_totalprice
-        |  FROM src WHERE o_orderkey % 97 = 0)
-        |SELECT COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 70000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_newspec
-        |FROM post WHERE o_year = 1995""".stripMargin,
-
-    // The changelog replayed from the source: updates with their new
-    // values, inserts with their rows (keys ≡0 mod 77 emit both).
-    "warehouse_snapshot_changes" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders)
-        |SELECT o_orderkey, o_year, o_totalprice + 100.0 AS o_totalprice,
-        |  'update' AS change_type
-        |FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |UNION ALL
-        |SELECT o_orderkey + 10000000, o_year, o_totalprice, 'insert'
-        |FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // Stats-skipped read ≡ plain filter over the base: the range sits
-    // above the merge decile (no updates) and below +10M (no inserts).
-    "warehouse_snapshot_skip" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders)
-        |SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM orders
-        |WHERE o_orderkey > 4 * (SELECT t FROM thr)
-        |  AND o_orderkey <= 5 * (SELECT t FROM thr)
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // The bloom table is v1 content (no merge batch); the lookup result
-    // must equal the plain filter — membership pruning is invisible.
-    "warehouse_snapshot_bloom" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders
-        |WHERE o_custkey = (SELECT MIN(o_custkey) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // The re-clustered snapshot reads v2's post-state, filtered to 1997.
-    "warehouse_snapshot_recluster" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT CAST(1997 AS INT) AS o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
-        |FROM post WHERE o_year = 1997""".stripMargin,
-
-    // Both writers' batches must survive the conflict: final state = v2
-    // post-state + A's rows (+20M, keys ≡0 mod 97 of what A read) + B's
-    // rows (+30M, keys ≡0 mod 89).
-    "warehouse_snapshot_conflict" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
-        |final AS (
-        |  SELECT * FROM post
-        |  UNION ALL
-        |  SELECT o_orderkey + 20000000, o_totalprice, o_year
-        |  FROM post WHERE o_orderkey % 97 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 30000000, o_totalprice, o_year
-        |  FROM post WHERE o_orderkey % 89 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 20000000 AND o_orderkey < 30000000
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_writer_a,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 30000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_writer_b
-        |FROM final GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Rollback restores the untouched base load (the v2 merge never
-    // happened as far as v3 readers are concerned): zero rows at +10M
-    // keys, totals equal to orders.
-    "warehouse_snapshot_rollback" ->
-      """SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(0 AS BIGINT) AS n_merge_rows
-        |FROM orders GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Three refs over one file pool: main and the release tag read the v2
-    // post-state (the branch write is invisible to them); dev reads the
-    // post-state plus its append batch (post keys ≡0 mod 103, +50M).
-    // The cross-table move replayed: post-txn hot = 1998+, archive =
-    // everything through 1997.
-    "warehouse_multi_table_txn" ->
-      """WITH src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice
-        |  FROM orders),
-        |lab AS (SELECT CASE WHEN o_year >= 1998 THEN 'hot' ELSE 'archive' END AS tbl,
-        |    o_year, o_totalprice
-        |  FROM src)
-        |SELECT tbl, o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM lab GROUP BY tbl, o_year ORDER BY tbl, o_year""".stripMargin,
-
-    // Cleanup is invisible to the table: the post-state is the ordinary
-    // v2 replay, and both verdicts must be TRUE.
-    "warehouse_orphan_scan" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  TRUE AS orphan_gone, TRUE AS live_intact
-        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // The manifest ledger recomputed from data: v1 = the base load, v2
-    // adds exactly the mod-11 insert batch (updates are count-neutral).
-    "warehouse_history" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |b AS (SELECT COUNT(*) AS c FROM orders),
-        |i AS (SELECT COUNT(*) AS c FROM orders
-        |      WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT CAST(1 AS BIGINT) AS version, CAST(b.c AS BIGINT) AS n_rows,
-        |  CAST(b.c AS BIGINT) AS rows_added FROM b
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(b.c + i.c AS BIGINT), CAST(i.c AS BIGINT)
-        |FROM b, i
-        |ORDER BY version""".stripMargin,
-
-    // The v2 post-state (same `post` replay as branch_tag) plus the
-    // mod-101 staged batch — its presence in MAIN is the publish proof.
-    "warehouse_wap_publish" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
-        |pub AS (
-        |  SELECT * FROM post
-        |  UNION ALL
-        |  SELECT o_orderkey + 70000000, o_totalprice, o_year
-        |  FROM post WHERE o_orderkey % 101 = 0 AND o_orderkey < 10000000)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 70000000 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_staged,
-        |  CAST(3 AS BIGINT) AS published_version
-        |FROM pub GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Row-by-row lineage replay: ids equal the ingest keys (stable),
-    // modified_v bumps exactly on the mod-7 update predicate, inserts
-    // stamp created_v = modified_v = 2.
-    "warehouse_row_lineage" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |rws AS (
-        |  SELECT o_orderkey AS row_id, o_orderkey, o_year,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    CAST(1 AS BIGINT) AS created_v,
-        |    CAST(CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN 2 ELSE 1 END AS BIGINT) AS modified_v
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_orderkey + 10000000, o_year, o_totalprice,
-        |    CAST(2 AS BIGINT), CAST(2 AS BIGINT)
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT row_id, o_orderkey, o_year, o_totalprice, created_v, modified_v
-        |FROM rws ORDER BY row_id""".stripMargin,
-
-    "warehouse_branch_tag" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
-        |dev AS (
-        |  SELECT * FROM post
-        |  UNION ALL
-        |  SELECT o_orderkey + 50000000, o_totalprice, o_year
-        |  FROM post WHERE o_orderkey % 103 = 0),
-        |refs AS (
-        |  SELECT 'main' AS branch, * FROM post
-        |  UNION ALL SELECT 'dev' AS branch, * FROM dev
-        |  UNION ALL SELECT 'tag_release' AS branch, * FROM post)
-        |SELECT branch, o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 50000000 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_branch_only
-        |FROM refs GROUP BY branch, o_year ORDER BY branch, o_year""".stripMargin,
-
-    // Expiration is content-invisible to the retained snapshot: the
-    // CURRENT rollup is v2's exact post-state; the verdict columns must
-    // both come back TRUE (no live file lost, expired manifest dropped).
-    "warehouse_snapshot_expire" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted,
-        |  TRUE AS live_intact, TRUE AS expired_gone
-        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // The incrementally-maintained MV must equal the full v2 recompute —
-    // the oracle IS the full recompute, so equality is the grade.
-    "warehouse_cdc_apply" ->
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
-        |SELECT o_year, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin,
-
-    // Z-order is content-invisible: the skipped read equals the plain
-    // base filter (thr2 = max custkey // 10, same floor division).
-    "warehouse_snapshot_zorder" ->
+    },
+      // Z-order is content-invisible: the skipped read equals the plain
+      // base filter (thr2 = max custkey // 10, same floor division).
       """WITH thr AS (SELECT MAX(o_custkey) // 10 AS t FROM orders)
         |SELECT year(o_orderdate) AS o_year, COUNT(*) AS n_rows,
         |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust,
@@ -2016,12 +1948,22 @@ object Lakehouse extends Family {
         |FROM orders
         |WHERE o_custkey > 4 * (SELECT t FROM thr)
         |  AND o_custkey <= 5 * (SELECT t FROM thr)
-        |GROUP BY o_year ORDER BY o_year""".stripMargin,
+        |GROUP BY o_year ORDER BY o_year""".stripMargin),
 
-    // Post-delete state tagged 'base' plus the backfill batch (keys ≡0
-    // mod 101 shifted +40M) tagged 'backfill' — old rows surface the
-    // evolved column as NULL on the engine side and coalesce to 'base'.
-    "warehouse_snapshot_evolve" ->
+    // Schema evolution: v5 adds `o_channel` via an appended backfill file;
+    // pre-evolution files carry by reference (LakehouseSpec asserts zero
+    // rewrites) and read back with the column NULL -> 'base'.
+    Op("warehouse_snapshot_evolve", (s, d) => {
+      val root = ensureEvolved(s, d)
+      readSnapshotMerged(s, root, 5)
+        .groupBy(col("o_year"), coalesce(col("o_channel"), lit("base")).as("channel"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(dec(col("o_totalprice"))).cast("double").as("total"))
+        .orderBy("o_year", "channel")
+    },
+      // Post-delete state tagged 'base' plus the backfill batch (keys ≡0
+      // mod 101 shifted +40M) tagged 'backfill' — old rows surface the
+      // evolved column as NULL on the engine side and coalesce to 'base'.
       """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
         |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
         |post AS (
@@ -2043,22 +1985,24 @@ object Lakehouse extends Family {
         |  FROM src WHERE o_orderkey % 101 = 0)
         |SELECT o_year, channel, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM final GROUP BY o_year, channel ORDER BY o_year, channel""".stripMargin,
+        |FROM final GROUP BY o_year, channel ORDER BY o_year, channel""".stripMargin),
 
-    // The masked-view rollup replayed inline — the policy (mask, bucket,
-    // row filter) must transform identically in both engines.
-    "warehouse_masked_view" ->
-      """SELECT c_mktsegment,
-        |  CAST(FLOOR(c_acctbal / 100) * 100 AS DOUBLE) AS acctbal_bucket,
-        |  COUNT(*) AS n_cust,
-        |  COUNT(DISTINCT CONCAT('Customer#***', RIGHT(c_name, 3))) AS n_masked_names
-        |FROM customer WHERE c_mktsegment <> 'AUTOMOBILE'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Streamed-through-the-table content must equal the batch aggregate.
-    "stream_lakehouse_sink" ->
+    // Exactly-once streaming ingest into the ACID table: an AvailableNow
+    // file stream appends each micro-batch via a ledger-carrying snapshot
+    // commit; the graded read aggregates the TABLE. Real oracle (not
+    // golden): the streamed content must equal the batch aggregate over
+    // events — the streaming ≡ batch contract with a lakehouse in between.
+    Op("stream_lakehouse_sink", (s, d) => {
+      val root = ensureStreamTable(s, d)
+      readSnapshot(s, root, currentVersion(root).get)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value_cents")).as("value_cents"))
+        .orderBy("event_type")
+    },
+      // Streamed-through-the-table content must equal the batch aggregate.
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
   )
 }

@@ -91,86 +91,6 @@ object LlmOps extends Family {
       .select("a", "b", "jaccard")
   }
 
-  val queries: Map[String, Q] = unique(
-    // Exact dedup by content hash: keep lowest doc_id per md5(text).
-    "llm_dedup_exact" -> ((s, d) => {
-      val h = Tables.documents(s, d).withColumn("h", md5(col("text")))
-      val keep = h.groupBy("h").agg(min("doc_id").as("keep_id"))
-      h.join(keep, "h")
-        .withColumn("is_kept", col("doc_id") === col("keep_id"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          count(when(col("is_kept"), 1)).as("n_kept"),
-          count(when(!col("is_kept"), 1)).as("n_dropped"))
-        .orderBy("lang")
-    }),
-
-    // Near-duplicate pairs by 3-gram-shingle Jaccard >= 0.5. Candidate
-    // pairs come from per-shingle POSTING LISTS (group by shingle, emit the
-    // co-occurring doc pairs) instead of a self-join — one shuffle on the
-    // shingle, pairs bounded by sum(df²) which stays tiny because common
-    // shingles are rare; Jaccard is exact (|∩| from the postings,
-    // |∪| = |A|+|B|-|∩|).
-    "llm_dedup_near" -> ((s, d) => nearPairs(s, d).orderBy("a", "b")),
-
-    // Similarity search: top-5 cosine neighbors for probe set vec_id < 10,
-    // using the native CosineSimilarity expression; rank on ROUNDED sims so
-    // ordering is identical across engines.
-    "llm_sim_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val p = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"))
-      val w = Window.partitionBy("probe_id").orderBy(desc("sim"), col("neighbor_id"))
-      broadcast(p).join(e, col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          round(call_function("cosine_sim", col("p_emb"), col("emb")), 4).as("sim"))
-        .withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 5)
-        .orderBy("probe_id", "rnk")
-    }),
-
-    // Text analysis: global top-20 tokens.
-    "llm_text_tokens" -> ((s, d) =>
-      Tables.documents(s, d)
-        .select(explode(split(col("text"), " ")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), col("token"))
-        .limit(20)),
-
-    // Per-language corpus stats.
-    "llm_text_stats" -> ((s, d) =>
-      Tables.documents(s, d)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("source")).as("n_sources"),
-          sum(col("n_chars")).as("total_chars"),
-          round(sum(col("n_chars")).cast("double") / count(lit(1)), 4).as("avg_chars"),
-          round(sum(size(split(col("text"), " ")).cast("long")).cast("double") / count(lit(1)), 4)
-            .as("avg_tokens"))
-        .orderBy("lang")),
-
-    // Multimodal: text table ⋈ vector table; per (lang,label) count + mean
-    // cosine of each doc's embedding to its label centroid.
-    "llm_multimodal" -> ((s, d) => {
-      val ex = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"),
-          posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "v")))
-      val cent = ex.groupBy("label", "dim")
-        .agg((sum("v") / count(lit(1))).as("cv"))
-      val percos = ex.join(cent, Seq("label", "dim"))
-        .groupBy("vec_id", "label")
-        .agg((sum(col("v") * col("cv"))
-          / (sqrt(sum(col("v") * col("v"))) * sqrt(sum(col("cv") * col("cv"))))).as("cos"))
-      Tables.documents(s, d)
-        .join(percos, col("doc_id") === col("vec_id"))
-        .groupBy("lang", "label")
-        .agg(count(lit(1)).as("n_docs"),
-          round(sum("cos") / count(lit(1)), 4).as("avg_cos"))
-        .orderBy("lang", "label")
-    })
-  )
-
   /** DuckDB CTE fragment mirroring `nearPairs` (dd/sh/sz/keep/inter) — the
     * ONE SQL copy of the shingle/posting-list pair generator; llm_dedup_
     * near's oracle and LlmPipeline's cluster oracle both build on it, so
@@ -190,24 +110,56 @@ object LlmOps extends Family {
        |          JOIN keep ON x.s = keep.s
        |          GROUP BY 1, 2)""".stripMargin
 
-  val oracles: Map[String, String] = unique(
-    "llm_dedup_exact" ->
+  val ops: Seq[Op] = Seq(
+    // Exact dedup by content hash: keep lowest doc_id per md5(text).
+    Op("llm_dedup_exact", (s, d) => {
+      val h = Tables.documents(s, d).withColumn("h", md5(col("text")))
+      val keep = h.groupBy("h").agg(min("doc_id").as("keep_id"))
+      h.join(keep, "h")
+        .withColumn("is_kept", col("doc_id") === col("keep_id"))
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          count(when(col("is_kept"), 1)).as("n_kept"),
+          count(when(!col("is_kept"), 1)).as("n_dropped"))
+        .orderBy("lang")
+    },
       """WITH h AS (SELECT doc_id, lang, md5(text) AS h FROM documents),
         |k AS (SELECT h, MIN(doc_id) AS keep_id FROM h GROUP BY h)
         |SELECT lang, COUNT(*) AS n_docs,
         |  COUNT(CASE WHEN doc_id = keep_id THEN 1 END) AS n_kept,
         |  COUNT(CASE WHEN doc_id <> keep_id THEN 1 END) AS n_dropped
         |FROM h JOIN k USING (h)
-        |GROUP BY lang ORDER BY lang""".stripMargin,
+        |GROUP BY lang ORDER BY lang""".stripMargin),
 
-    "llm_dedup_near" ->
+    // Near-duplicate pairs by 3-gram-shingle Jaccard >= 0.5. Candidate
+    // pairs come from per-shingle POSTING LISTS (group by shingle, emit the
+    // co-occurring doc pairs) instead of a self-join — one shuffle on the
+    // shingle, pairs bounded by sum(df²) which stays tiny because common
+    // shingles are rare; Jaccard is exact (|∩| from the postings,
+    // |∪| = |A|+|B|-|∩|).
+    Op("llm_dedup_near", (s, d) => nearPairs(s, d).orderBy("a", "b"),
       s"""WITH $nearPairsSqlCtes
          |SELECT a, b, ROUND(c * 1.0 / (sa.n + sb.n - c), 4) AS jaccard
          |FROM inter JOIN sz sa ON a = sa.doc_id JOIN sz sb ON b = sb.doc_id
          |WHERE ROUND(c * 1.0 / (sa.n + sb.n - c), 4) >= 0.5
-         |ORDER BY a, b""".stripMargin,
+         |ORDER BY a, b""".stripMargin),
 
-    "llm_sim_topk" ->
+    // Similarity search: top-5 cosine neighbors for probe set vec_id < 10,
+    // using the native CosineSimilarity expression; rank on ROUNDED sims so
+    // ordering is identical across engines.
+    Op("llm_sim_topk", (s, d) => {
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+      val p = e.where(col("vec_id") < 10)
+        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"))
+      val w = Window.partitionBy("probe_id").orderBy(desc("sim"), col("neighbor_id"))
+      broadcast(p).join(e, col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+          round(call_function("cosine_sim", col("p_emb"), col("emb")), 4).as("sim"))
+        .withColumn("rnk", row_number().over(w))
+        .where(col("rnk") <= 5)
+        .orderBy("probe_id", "rnk")
+    },
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
         |p AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
         |sim AS (SELECT probe_id, vec_id AS neighbor_id,
@@ -217,21 +169,55 @@ object LlmOps extends Family {
         |        CAST(ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS INT) AS rnk
         |      FROM sim)
         |SELECT probe_id, neighbor_id, sim, rnk FROM r WHERE rnk <= 5
-        |ORDER BY probe_id, rnk""".stripMargin,
+        |ORDER BY probe_id, rnk""".stripMargin),
 
-    "llm_text_tokens" ->
+    // Text analysis: global top-20 tokens.
+    Op("llm_text_tokens", (s, d) =>
+      Tables.documents(s, d)
+        .select(explode(split(col("text"), " ")).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("cnt"))
+        .orderBy(desc("cnt"), col("token"))
+        .limit(20),
       """SELECT token, COUNT(*) AS cnt FROM (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents
-        |) GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin,
+        |) GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin),
 
-    "llm_text_stats" ->
+    // Per-language corpus stats.
+    Op("llm_text_stats", (s, d) =>
+      Tables.documents(s, d)
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("source")).as("n_sources"),
+          sum(col("n_chars")).as("total_chars"),
+          round(sum(col("n_chars")).cast("double") / count(lit(1)), 4).as("avg_chars"),
+          round(sum(size(split(col("text"), " ")).cast("long")).cast("double") / count(lit(1)), 4)
+            .as("avg_tokens"))
+        .orderBy("lang"),
       """SELECT lang, COUNT(*) AS n_docs, COUNT(DISTINCT source) AS n_sources,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
         |  ROUND(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*), 4) AS avg_chars,
         |  ROUND(CAST(SUM(len(string_split(text, ' '))) AS DOUBLE) / COUNT(*), 4) AS avg_tokens
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
 
-    "llm_multimodal" ->
+    // Multimodal: text table ⋈ vector table; per (lang,label) count + mean
+    // cosine of each doc's embedding to its label centroid.
+    Op("llm_multimodal", (s, d) => {
+      val ex = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("label"),
+          posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "v")))
+      val cent = ex.groupBy("label", "dim")
+        .agg((sum("v") / count(lit(1))).as("cv"))
+      val percos = ex.join(cent, Seq("label", "dim"))
+        .groupBy("vec_id", "label")
+        .agg((sum(col("v") * col("cv"))
+          / (sqrt(sum(col("v") * col("v"))) * sqrt(sum(col("cv") * col("cv"))))).as("cos"))
+      Tables.documents(s, d)
+        .join(percos, col("doc_id") === col("vec_id"))
+        .groupBy("lang", "label")
+        .agg(count(lit(1)).as("n_docs"),
+          round(sum("cos") / count(lit(1)), 4).as("avg_cos"))
+        .orderBy("lang", "label")
+    },
       """WITH ex AS (
         |  SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS dim,
         |    CAST(unnest(embedding) AS DOUBLE) AS v
@@ -247,6 +233,7 @@ object LlmOps extends Family {
         |SELECT lang, label, COUNT(*) AS n_docs,
         |  ROUND(SUM(cos) / COUNT(*), 4) AS avg_cos
         |FROM documents JOIN percos ON doc_id = vec_id
-        |GROUP BY lang, label ORDER BY lang, label""".stripMargin
+        |GROUP BY lang, label ORDER BY lang, label""".stripMargin)
   )
+
 }

@@ -29,7 +29,36 @@ object LlmPipeline extends Family {
   private val BpeRounds = 5
   private val ChunkS = 48
 
-  val queries: Map[String, Q] = unique(
+  /** The BPE training loop shared by `llm_bpe_merge` (reports the learned
+    * merges) and `llm_bpe_encode` (applies them): `BpeRounds` rounds of
+    * count-adjacent-pairs → deterministic argmax (freq, pair) → greedy
+    * leftmost non-overlapping merge, all over the word-frequency ROLLUP
+    * (vocab-sized, corpus-weighted — the corpus is scanned exactly once
+    * for the rollup, every round after that is O(vocab)). The merge
+    * application is a codegen'd aggregate() fold over the symbol array;
+    * per-round driver sync is one scalar collect (the argmax pair), the
+    * `llm_dedup_cluster` iterative shape, with localCheckpoint truncating
+    * lineage between rounds. Returns the final per-word symbol table
+    * (w, c, syms) and one row per round: (round, a, b, freq, corpus
+    * symbol count after the merge — monotone decreasing, asserted in
+    * LlmScaleSpec). */
+  /** Both bpe ops (merge reports the rounds, encode applies them) share
+    * one training run per (JVM, sf) — the trained artifact is exactly the
+    * thing a pipeline persists, so re-training it per query was pure
+    * waste. The cached syms frame is a localCheckpoint (session-scoped,
+    * like every other cache in this JVM). */
+  private val bpeCache =
+    scala.collection.concurrent.TrieMap[String, (DataFrame, Seq[(Int, String, String, Long, Long)])]()
+
+  /** The shared shingle/pair CTEs (ONE copy, in LlmOps next to
+    * `nearPairs`) plus the thresholded pair set. */
+  private val pairsSql =
+    s"""${LlmOps.nearPairsSqlCtes},
+       |pairs AS (SELECT a, b FROM inter
+       |          JOIN sz sa ON a = sa.doc_id JOIN sz sb ON b = sb.doc_id
+       |          WHERE ROUND(c * 1.0 / (sa.n + sb.n - c), 4) >= 0.5)""".stripMargin
+
+  val ops: Seq[Op] = Seq(
     // Connected components over the near-dup graph (Jaccard ≥ 0.5 pairs
     // from the shared posting-list generator): min-label propagation WITH
     // POINTER DOUBLING to a fixpoint — each node ends with the smallest
@@ -44,7 +73,7 @@ object LlmPipeline extends Family {
     // min-aggregate, localCheckpoint truncating the plan between rounds
     // exactly like GraphX's Pregel. Converged labels are asserted (a
     // non-converged exit throws rather than returning wrong clusters).
-    "llm_dedup_cluster" -> ((s, d) => {
+    Op("llm_dedup_cluster", (s, d) => {
       val maxIters = s.conf.get("graft.cc.maxIters", "20").toInt
       val pairs = nearPairsOf(s, d).select("a", "b")
       val edges = pairs.unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
@@ -101,14 +130,27 @@ object LlmPipeline extends Family {
         .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
           col("cluster_size"))
         .orderBy("doc_id")
-    }),
+    },
+      // Transitive closure by recursive CTE; MIN over the closure is the
+      // same component-minimum the label propagation converges to.
+      s"""WITH RECURSIVE
+         |$pairsSql,
+         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b AS a, a AS b FROM pairs),
+         |reach AS (SELECT a AS src, a AS dst FROM edges
+         |          UNION
+         |          SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
+         |lbl AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
+         |sizes AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lbl GROUP BY cluster_id)
+         |SELECT doc_id, l.cluster_id, cluster_size
+         |FROM lbl l JOIN sizes z ON l.cluster_id = z.cluster_id
+         |ORDER BY doc_id""".stripMargin),
 
     // Train/test contamination audit (decontamination stage): deterministic
     // hash split, distinct 3-gram shingles, and for every test doc the
     // fraction of its shingles that also occur anywhere in train. The join
     // shuffles on the shingle string; the train side is pre-distinct so
     // each shingle crosses the wire once.
-    "llm_contamination" -> ((s, d) => {
+    Op("llm_contamination", (s, d) => {
       val sh = Tables.documents(s, d)
         .withColumn("u", expr(
           md5Bits("CAST(doc_id AS STRING)", 8)))
@@ -127,13 +169,27 @@ object LlmPipeline extends Family {
         .withColumn("contamination",
           round(col("n_contaminated") / col("n_shingles").cast("double"), 4))
         .orderBy("doc_id")
-    }),
+    },
+      s"""WITH dd AS (SELECT doc_id,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
+         |    string_split(text, ' ') AS t FROM documents),
+         |sh AS (SELECT doc_id, u, unnest(list_distinct(list_transform(
+         |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sg
+         |       FROM dd),
+         |train AS (SELECT DISTINCT sg AS tsg FROM sh WHERE u < $TrainCap),
+         |test AS (SELECT doc_id, sg FROM sh WHERE u >= $TestFloor)
+         |SELECT test.doc_id, COUNT(*) AS n_shingles,
+         |  CAST(SUM(CASE WHEN tsg IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
+         |  ROUND(CAST(SUM(CASE WHEN tsg IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         |    / CAST(COUNT(*) AS DOUBLE), 4) AS contamination
+         |FROM test LEFT JOIN train ON test.sg = train.tsg
+         |GROUP BY test.doc_id ORDER BY doc_id""".stripMargin),
 
     // Within-doc repetition metrics (Gopher-style quality filters):
     // duplicate-bigram and duplicate-trigram fractions, computed entirely
     // inside array expressions — a pure projection, zero shuffle, linear
     // in corpus size at any scale.
-    "llm_repetition" -> ((s, d) =>
+    Op("llm_repetition", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         // n-gram arrays guarded: Spark sequence(0, -1) DESCENDS for short
@@ -154,13 +210,22 @@ object LlmPipeline extends Family {
           when(size(col("tri")) === 0, 0.0).otherwise(
             round((size(col("tri")) - size(array_distinct(col("tri"))))
               / size(col("tri")).cast("double"), 4)).as("dup_trigram_frac"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """WITH x AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |g AS (SELECT doc_id, len(t) AS n_tokens,
+        |    list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1]) AS bi,
+        |    list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) AS tri
+        |  FROM x)
+        |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
+        |  ROUND((len(bi) - len(list_distinct(bi))) / CAST(len(bi) AS DOUBLE), 4) AS dup_bigram_frac,
+        |  ROUND((len(tri) - len(list_distinct(tri))) / CAST(len(tri) AS DOUBLE), 4) AS dup_trigram_frac
+        |FROM g ORDER BY doc_id""".stripMargin),
 
     // Overlapping token-window chunking (the RAG/context-window ingestion
     // shape): W=64-token windows at stride S=48, chunk count
     // 1 + ceil((n−W)/S) — integer arithmetic only (DIV truncates alike in
     // both engines; a double ceil would not). Pure projection + explode.
-    "llm_chunk" -> ((s, d) =>
+    Op("llm_chunk", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .withColumn("n", size(col("t")))
@@ -175,14 +240,25 @@ object LlmPipeline extends Family {
           col("start_tok").cast("int").as("start_tok"), col("chunk_len").cast("int").as("chunk_len"),
           expr("t[start_tok]").as("first_tok"),
           expr("t[start_tok + chunk_len - 1]").as("last_tok"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      """WITH x AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |y AS (SELECT doc_id, t, len(t) AS n,
+        |    1 + CASE WHEN len(t) > 64 THEN ((len(t) - 64) + 47) // 48 ELSE 0 END AS nc
+        |  FROM x),
+        |z AS (SELECT doc_id, t, n, unnest(generate_series(0, nc - 1)) AS chunk_idx FROM y)
+        |SELECT doc_id, CAST(n AS INT) AS n_tokens, CAST(chunk_idx AS INT) AS chunk_idx,
+        |  CAST(chunk_idx * 48 AS INT) AS start_tok,
+        |  CAST(least(64, n - chunk_idx * 48) AS INT) AS chunk_len,
+        |  t[chunk_idx * 48 + 1] AS first_tok,
+        |  t[chunk_idx * 48 + least(64, n - chunk_idx * 48)] AS last_tok
+        |FROM z ORDER BY doc_id, chunk_idx""".stripMargin),
 
     // Corpus bigram language-model table: for the 10 most frequent first
     // tokens, the top-3 continuations with conditional probability
     // p(w2|w1) = c(w1,w2)/c(w1·) — pure counts and one rational division,
     // deterministic cross-engine. Two hash aggregations (bigram, then
     // margin) + two small windows; everything shuffles on token keys.
-    "llm_bigram_lm" -> ((s, d) => {
+    Op("llm_bigram_lm", (s, d) => {
       val bi = Tables.documents(s, d)
         .select(split(col("text"), " ").as("t"))
         .where(size(col("t")) >= 2) // sequence(0, -1) would descend
@@ -202,14 +278,26 @@ object LlmPipeline extends Family {
         .select(col("w1"), col("rk").cast("int").as("rk"), col("w2"),
           col("c12"), col("c1"), col("p"))
         .orderBy("w1", "rk")
-    }),
+    },
+      """WITH t AS (SELECT string_split(text, ' ') AS t FROM documents),
+        |bi AS (SELECT t[i] AS w1, t[i+1] AS w2, COUNT(*) AS c12
+        |       FROM t, unnest(generate_series(1, len(t) - 1)) u(i)
+        |       GROUP BY t[i], t[i+1]),
+        |c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM bi GROUP BY w1),
+        |top1 AS (SELECT *, row_number() OVER (ORDER BY c1 DESC, w1 ASC) AS r1 FROM c1),
+        |j AS (SELECT bi.w1, bi.w2, bi.c12, top1.c1,
+        |        ROUND(bi.c12 / CAST(top1.c1 AS DOUBLE), 6) AS p,
+        |        row_number() OVER (PARTITION BY bi.w1 ORDER BY bi.c12 DESC, bi.w2 ASC) AS rk
+        |      FROM bi JOIN top1 ON bi.w1 = top1.w1 WHERE top1.r1 <= 10)
+        |SELECT w1, CAST(rk AS INT) AS rk, w2, c12, c1, p
+        |FROM j WHERE rk <= 3 ORDER BY w1, rk""".stripMargin),
 
     // Vocabulary coverage curve — the BPE-prep diagnostic: terms by
     // frequency with cumulative corpus coverage; top-100 emitted. The
     // cumsum window runs over the (freq desc, term) total order; coverage
     // is a rational fraction of the corpus token count (no collect — the
     // total joins in as a 1-row broadcast).
-    "llm_vocab_coverage" -> ((s, d) => {
+    Op("llm_vocab_coverage", (s, d) => {
       val tf = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("freq"))
@@ -227,14 +315,25 @@ object LlmPipeline extends Family {
         .select(col("rank").cast("int").as("rank"), col("term"), col("freq"),
           round(col("cum") / col("total").cast("double"), 6).as("coverage"))
         .orderBy("rank")
-    }),
+    },
+      """WITH tf AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
+        |f AS (SELECT term, COUNT(*) AS freq FROM tf GROUP BY term),
+        |tot AS (SELECT CAST(SUM(freq) AS BIGINT) AS total FROM f),
+        |r AS (SELECT term, freq,
+        |        row_number() OVER (ORDER BY freq DESC, term ASC) AS rank,
+        |        CAST(SUM(freq) OVER (ORDER BY freq DESC, term ASC
+        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+        |      FROM f)
+        |SELECT CAST(rank AS INT) AS rank, term, freq,
+        |  ROUND(cum / CAST(total AS DOUBLE), 6) AS coverage
+        |FROM r CROSS JOIN tot WHERE rank <= 100 ORDER BY rank""".stripMargin),
 
     // Salient terms per doc: tf × (N/df) — idf linearized to keep the
     // arithmetic purely rational (+,-,×,÷ are IEEE-identical cross-engine;
     // a libm log is not), which preserves the per-term df ranking. Top-3
     // per doc by (rounded score desc, term asc) — a total order, so the
     // window pick is deterministic.
-    "llm_top_terms" -> ((s, d) => {
+    Op("llm_top_terms", (s, d) => {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -257,14 +356,28 @@ object LlmPipeline extends Family {
         .where(col("rank") <= 3)
         .select(col("doc_id"), col("rank"), col("term"), col("score"), col("tf"))
         .orderBy("doc_id", "rank")
-    }),
+    },
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+        |nd AS (SELECT COUNT(*) AS nd FROM documents),
+        |scored AS (
+        |  SELECT tf.doc_id, tf.term, tf.tf,
+        |    ROUND((tf / CAST(dl AS DOUBLE)) * (nd / CAST(df AS DOUBLE)), 6) AS score
+        |  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
+        |       JOIN df ON tf.term = df.term CROSS JOIN nd),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+        |        ORDER BY score DESC, term ASC) AS rank FROM scored)
+        |SELECT doc_id, CAST(rank AS INT) AS rank, term, score, tf
+        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
 
     // Corpus datasheet (the "dataset card" rollup every training-data
     // release ships): per-language doc/token/source tallies, exact-text
     // duplication rate, and mean document length — counts and rational
     // divisions only, one shuffle on the language key plus the distinct
     // sub-aggregates Spark plans as expand+two-phase.
-    "llm_corpus_stats" -> ((s, d) =>
+    Op("llm_corpus_stats", (s, d) =>
       Tables.documents(s, d)
         .select(col("lang"), col("source"), col("text"),
           size(split(col("text"), " ")).cast("bigint").as("n_tok"))
@@ -281,7 +394,19 @@ object LlmPipeline extends Family {
           (col("n_tokens").cast("double") / col("n_docs").cast("double"))
             .as("avg_tok"),
           col("min_tok"), col("max_tok"))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      """WITH t AS (SELECT lang, source, text,
+        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+        |           FROM documents)
+        |SELECT lang, COUNT(*) AS n_docs,
+        |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+        |  COUNT(DISTINCT source) AS n_sources,
+        |  COUNT(DISTINCT text) AS n_distinct_texts,
+        |  ROUND(1.0 - COUNT(DISTINCT text) / CAST(COUNT(*) AS DOUBLE), 6) AS dup_rate,
+        |  CAST(SUM(n_tok) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_tok,
+        |  CAST(MIN(n_tok) AS BIGINT) AS min_tok,
+        |  CAST(MAX(n_tok) AS BIGINT) AS max_tok
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
 
     // Pair-level contamination report (the audit detail behind
     // llm_contamination's per-doc fractions): which TRAIN doc leaked into
@@ -289,7 +414,7 @@ object LlmPipeline extends Family {
     // doc's trigram count. Candidates come from a posting-list join on
     // the shingle key (volume bounded by Σdf_train·df_test per shingle,
     // never |test|×|train|), then one rollup per pair.
-    "llm_ngram_overlap" -> ((s, d) => {
+    Op("llm_ngram_overlap", (s, d) => {
       val sh = Tables.documents(s, d)
         .withColumn("u", expr(
           md5Bits("CAST(doc_id AS STRING)", 8)))
@@ -309,7 +434,23 @@ object LlmPipeline extends Family {
         .where(col("overlap") >= 0.2)
         .select("test_id", "train_id", "n_shared", "overlap")
         .orderBy("test_id", "train_id")
-    }),
+    },
+      s"""WITH dd AS (SELECT doc_id,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
+         |    string_split(text, ' ') AS t FROM documents),
+         |sh AS (SELECT doc_id, u, unnest(list_distinct(list_transform(
+         |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sg
+         |       FROM dd WHERE len(t) > 2),
+         |test AS (SELECT doc_id AS test_id, sg FROM sh WHERE u >= $TestFloor),
+         |train AS (SELECT doc_id AS train_id, sg FROM sh WHERE u < $TrainCap),
+         |ts AS (SELECT test_id, COUNT(*) AS n_test FROM test GROUP BY test_id),
+         |p AS (SELECT test_id, train_id, COUNT(*) AS n_shared
+         |      FROM test JOIN train USING (sg) GROUP BY test_id, train_id)
+         |SELECT p.test_id AS test_id, p.train_id AS train_id, p.n_shared AS n_shared,
+         |  ROUND(p.n_shared / CAST(ts.n_test AS DOUBLE), 4) AS overlap
+         |FROM p JOIN ts ON p.test_id = ts.test_id
+         |WHERE ROUND(p.n_shared / CAST(ts.n_test AS DOUBLE), 4) >= 0.2
+         |ORDER BY p.test_id, p.train_id""".stripMargin),
 
     // URL-canonicalization dedup — the first dedup stage of every web
     // crawl: many URLs name one resource, so the canonical form (lowered
@@ -318,7 +459,7 @@ object LlmPipeline extends Family {
     // tracking params and a fragment); canonicalization goes through
     // parse_url, the grouping is one hash shuffle on the canonical key —
     // linear at any corpus size. Keeper = min doc_id per group.
-    "llm_dedup_url" -> ((s, d) =>
+    Op("llm_dedup_url", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           concat(lit("https://"), upper(col("source")), lit(".Example.COM/"),
@@ -329,7 +470,15 @@ object LlmPipeline extends Family {
         .groupBy("curl")
         .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keeper"))
         .where(col("n_dups") > 1)
-        .orderBy("curl")),
+        .orderBy("curl"),
+      """WITH c AS (
+        |  SELECT doc_id,
+        |    lower(source) || '.example.com/' || lang || '/doc/'
+        |      || (doc_id % 100) AS curl
+        |  FROM documents)
+        |SELECT curl, COUNT(*) AS n_dups, MIN(doc_id) AS keeper
+        |FROM c GROUP BY curl HAVING COUNT(*) > 1
+        |ORDER BY curl""".stripMargin),
 
     // LM-fluency (perplexity-class) quality filter: score each doc by its
     // mean bigram negative-log-likelihood under the corpus bigram LM and
@@ -339,7 +488,7 @@ object LlmPipeline extends Family {
     // an exact BIGINT (double sums over join-scattered rows would be
     // partition-order dependent — the agg_group money law, applied to
     // logs); the mean is one shared double division at the end.
-    "llm_ppl_filter" -> ((s, d) => {
+    Op("llm_ppl_filter", (s, d) => {
       // bi feeds THREE consumers (c12, c1 via c12, and the probe side of
       // the join); localCheckpoint materializes the explode once instead
       // of re-running the scan+split subtree per consumer.
@@ -362,14 +511,28 @@ object LlmPipeline extends Family {
           col("sum_nll").cast("double") / (col("n_bi").cast("double") * 1e6))
         .orderBy(col("avg_nll").desc, col("doc_id"))
         .limit(25)
-    }),
+    },
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |bi AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
+        |       FROM t, unnest(generate_series(1, len(t) - 1)) u(i)),
+        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
+        |c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c12 GROUP BY w1),
+        |sc AS (SELECT bi.doc_id,
+        |         CAST(ROUND(-ln(CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE)) * 1e6)
+        |           AS BIGINT) AS nll_micro
+        |       FROM bi JOIN c12 USING (w1, w2) JOIN c1 USING (w1))
+        |SELECT doc_id, COUNT(*) AS n_bi,
+        |  CAST(SUM(nll_micro) AS BIGINT) AS sum_nll,
+        |  CAST(SUM(nll_micro) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1e6) AS avg_nll
+        |FROM sc GROUP BY doc_id
+        |ORDER BY avg_nll DESC, doc_id LIMIT 25""".stripMargin),
 
     // Span-level dedup (the line/paragraph-dedup stage): docs are cut into
     // non-overlapping 8-token spans; a span seen in MORE THAN ONE doc is
     // boilerplate. Per-doc accounting of shared spans over the posting-
     // list groupBy — the same sub-quadratic shape as the shingle family,
     // one shuffle on the span.
-    "llm_dedup_span" -> ((s, d) => {
+    Op("llm_dedup_span", (s, d) => {
       // three consumers (dup, tot, probe) — materialize the explode once
       val sp = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
@@ -388,14 +551,27 @@ object LlmPipeline extends Family {
         .select(col("doc_id"), col("n_spans"), col("n_shared"),
           round(col("n_shared") / col("n_spans").cast("double"), 4).as("shared_frac"))
         .orderBy("doc_id")
-    }),
+    },
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |sp AS (SELECT doc_id, array_to_string(t[(8*i+1):(8*i+8)], ' ') AS span
+        |       FROM t, unnest(generate_series(0,
+        |         CAST(floor(len(t) / 8) AS INT) - 1)) u(i)),
+        |dup AS (SELECT span FROM sp GROUP BY span
+        |        HAVING COUNT(DISTINCT doc_id) > 1),
+        |tot AS (SELECT doc_id, COUNT(*) AS n_spans FROM sp GROUP BY doc_id)
+        |SELECT sp.doc_id AS doc_id, tot.n_spans AS n_spans,
+        |  COUNT(*) AS n_shared,
+        |  ROUND(COUNT(*) / CAST(tot.n_spans AS DOUBLE), 4) AS shared_frac
+        |FROM sp JOIN dup USING (span) JOIN tot ON sp.doc_id = tot.doc_id
+        |GROUP BY sp.doc_id, tot.n_spans
+        |ORDER BY doc_id""".stripMargin),
 
     // BPE merge-candidate counts (tokenizer-training step 1): adjacent
     // character-pair frequencies weighted by word frequency. The pair
     // explosion runs over the (already tiny) word-count relation, not the
     // corpus — the same rollup-first discipline as tpch_q13; top-20
     // merge candidates emitted.
-    "llm_bpe_pairs" -> ((s, d) => {
+    Op("llm_bpe_pairs", (s, d) => {
       val wc = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
@@ -406,7 +582,13 @@ object LlmPipeline extends Family {
         .groupBy("pair").agg(sum("c").cast("bigint").as("freq"))
         .orderBy(col("freq").desc, col("pair"))
         .limit(20)
-    }),
+    },
+      """WITH wf AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+        |wc AS (SELECT w, COUNT(*) AS c FROM wf GROUP BY w)
+        |SELECT w[i:i+1] AS pair, CAST(SUM(c) AS BIGINT) AS freq
+        |FROM wc, unnest(generate_series(1, length(w) - 1)) u(i)
+        |WHERE length(w) >= 2
+        |GROUP BY 1 ORDER BY freq DESC, pair LIMIT 20""".stripMargin),
 
     // BPE merge LOOP (tokenizer training, the part a pipeline actually
     // runs — `llm_bpe_pairs` is its single-round counting step): 5 rounds
@@ -421,11 +603,12 @@ object LlmPipeline extends Family {
     // row per round: the learned merge, its frequency, and the corpus
     // symbol count after applying it (monotone decreasing — asserted in
     // Round7OpsSpec-style law in LlmScaleSpec).
-    "llm_bpe_merge" -> ((s, d) => {
+    Op("llm_bpe_merge", (s, d) => {
       val (_, rounds) = bpeTrain(s, d)
       s.createDataFrame(rounds)
         .toDF("round", "a", "b", "freq", "n_syms").orderBy("round")
-    }),
+    },
+      bpeMergeOracle),
 
     // BPE ENCODE (tokenizer-training step 3 — the apply side of the
     // train/encode pair): segment every corpus word with the merges the
@@ -440,7 +623,7 @@ object LlmPipeline extends Family {
     // a production tokenizer-application stage runs. All outputs are
     // integer sums (exact cross-engine); the single ratio is one rounded
     // division of two BIGINTs.
-    "llm_bpe_encode" -> ((s, d) => {
+    Op("llm_bpe_encode", (s, d) => {
       val (syms, _) = bpeTrain(s, d)
       val vocab = syms.select(col("w"),
         size(col("syms")).cast("bigint").as("n_toks"),
@@ -458,7 +641,8 @@ object LlmPipeline extends Family {
         .withColumn("toks_per_100chars",
           round(col("n_tokens") * lit(100.0) / col("n_chars"), 4))
         .orderBy("lang")
-    }),
+    },
+      bpeEncodeOracle),
 
     // Cross-source LEAKAGE matrix — which pairs of ingest sources share
     // near-duplicate content (mirror sites, syndication, scraped
@@ -467,7 +651,7 @@ object LlmPipeline extends Family {
     // side's source, rolled up per unordered source pair with the
     // intra-source pairs flagged apart. The curation decision this
     // feeds: which source to DROP wholesale before paying per-doc dedup.
-    "llm_cross_source_leakage" -> ((s, d) => {
+    Op("llm_cross_source_leakage", (s, d) => {
       val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
       LlmOps.nearPairs(s, d)
         .join(broadcast(src.select(col("doc_id").as("a"), col("source").as("sa"))), "a")
@@ -478,7 +662,16 @@ object LlmPipeline extends Family {
         .agg(count(lit(1)).as("n_pairs"))
         .withColumn("is_cross", col("src_a") =!= col("src_b"))
         .orderBy("src_a", "src_b")
-    }),
+    },
+      // The shared near-pair CTEs + per-source-pair rollup.
+      s"""WITH $pairsSql,
+         |lab AS (SELECT LEAST(da.source, db.source) AS src_a,
+         |    GREATEST(da.source, db.source) AS src_b
+         |  FROM pairs
+         |  JOIN documents da ON pairs.a = da.doc_id
+         |  JOIN documents db ON pairs.b = db.doc_id)
+         |SELECT src_a, src_b, COUNT(*) AS n_pairs, src_a <> src_b AS is_cross
+         |FROM lab GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin),
 
     // SFT loss-mask accounting — the supervised-finetuning prep step
     // that decides which tokens the loss actually trains on: docs are
@@ -488,7 +681,7 @@ object LlmPipeline extends Family {
     // vs trainable whitespace tokens, and the trainable share in exact
     // ppm (integer DIV — no FP). Pure projection + bounded explode, no
     // shuffle until the final per-doc rollup.
-    "llm_loss_masking" -> ((s, d) => {
+    Op("llm_loss_masking", (s, d) => {
       val turns = Tables.documents(s, d)
         .select(col("doc_id"), col("text"), length(col("text")).as("len"))
         .withColumn("t", explode(sequence(lit(0), expr("CAST((len + 63) DIV 64 AS INT) - 1"))))
@@ -502,7 +695,24 @@ object LlmPipeline extends Family {
         .withColumn("trainable_ppm",
           expr("(toks_trainable * 1000000) DIV toks_total"))
         .orderBy("doc_id")
-    }),
+    },
+      // The 64-char turn segmentation and whitespace token counts replayed
+      // with the same 1-based substring window.
+      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
+        |turns AS (SELECT doc_id,
+        |    CAST(unnest(generate_series(0, (len + 63) // 64 - 1)) AS INT) AS t,
+        |    text FROM d),
+        |tk AS (SELECT doc_id, t,
+        |    CAST(len(string_split(substring(text, t * 64 + 1, 64), ' ')) AS BIGINT)
+        |      AS toks
+        |  FROM turns)
+        |SELECT doc_id, COUNT(*) AS n_turns,
+        |  CAST(SUM(toks) AS BIGINT) AS toks_total,
+        |  CAST(SUM(CASE WHEN t % 2 = 1 THEN toks ELSE 0 END) AS BIGINT)
+        |    AS toks_trainable,
+        |  CAST((SUM(CASE WHEN t % 2 = 1 THEN toks ELSE 0 END) * 1000000)
+        |    // SUM(toks) AS BIGINT) AS trainable_ppm
+        |FROM tk GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // The learned subword VOCABULARY as a table — what a tokenizer
     // release actually ships (and the deliverable the merge loop trains):
@@ -510,7 +720,7 @@ object LlmPipeline extends Family {
     // corpus-weighted occurrence count and whether it is a learned merge
     // or a base character. Reads the SAME cached training run as
     // merge/encode — three graded consumers, one training job.
-    "llm_bpe_vocab" -> ((s, d) => {
+    Op("llm_bpe_vocab", (s, d) => {
       val (syms, _) = bpeTrain(s, d)
       syms.select(col("c"), explode(col("syms")).as("sym"))
         .groupBy("sym")
@@ -518,7 +728,8 @@ object LlmPipeline extends Family {
         .withColumn("sym_len", length(col("sym")).cast("int"))
         .withColumn("is_merged", col("sym_len") > 1)
         .orderBy(desc("n_occurrences"), col("sym"))
-    }),
+    },
+      bpeVocabOracle),
 
     // Stupid-backoff n-gram scoring (the web-scale LM smoothing that
     // needs NO discount estimation — Brants et al.'s point): a bigram
@@ -529,7 +740,7 @@ object LlmPipeline extends Family {
     // TakeOrdered on the (score, w1, w2) total order — never a global
     // sort. Counts are two shuffle aggregates over one corpus scan each;
     // the unigram table joins in by key (broadcast-sized vocabulary).
-    "llm_trigram_backoff" -> ((s, d) => {
+    Op("llm_trigram_backoff", (s, d) => {
       val t = Tables.documents(s, d).select(split(col("text"), " ").as("t"))
       val bi = t.where(size(col("t")) >= 2)
         .select(explode(expr(
@@ -556,7 +767,26 @@ object LlmPipeline extends Family {
         .select("w1", "w2", "c2", "score_micro", "used_backoff")
       top(scored.where(!col("used_backoff")))
         .unionAll(top(scored.where(col("used_backoff"))))
-    }),
+    },
+      // The backoff branch and its integer arithmetic replayed exactly.
+      """WITH t AS (SELECT string_split(text, ' ') AS t FROM documents),
+        |bi AS (SELECT t[i] AS w1, t[i+1] AS w2, CAST(COUNT(*) AS BIGINT) AS c2
+        |  FROM t, unnest(generate_series(1, len(t) - 1)) u(i)
+        |  WHERE len(t) >= 2 GROUP BY 1, 2),
+        |uni AS (SELECT unnest(t) AS w FROM t),
+        |uc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1 FROM uni GROUP BY 1),
+        |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS n FROM uc),
+        |sc AS (SELECT w1, w2, c2,
+        |    CAST(CASE WHEN c2 >= 3 THEN (c2 * 1000000) // cx.c1
+        |         ELSE (4 * ((cw.c1 * 1000000) // n.n)) // 10 END AS BIGINT)
+        |      AS score_micro,
+        |    c2 < 3 AS used_backoff
+        |  FROM bi JOIN uc cx ON bi.w1 = cx.w JOIN uc cw ON bi.w2 = cw.w, n)
+        |SELECT * FROM (SELECT * FROM sc WHERE NOT used_backoff
+        |               ORDER BY score_micro DESC, w1, w2 LIMIT 25)
+        |UNION ALL
+        |SELECT * FROM (SELECT * FROM sc WHERE used_backoff
+        |               ORDER BY score_micro DESC, w1, w2 LIMIT 25)""".stripMargin),
 
     // BM25 relevance ranking — the retrieval-quality scorer of a
     // training-data curation stack (query-targeted corpus slicing,
@@ -569,7 +799,7 @@ object LlmPipeline extends Family {
     // sums over join-scattered rows are partition-order dependent);
     // expression shapes mirror the oracle token-for-token so both
     // engines compute identical doubles before the single rounding.
-    "llm_bm25" -> ((s, d) => {
+    Op("llm_bm25", (s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
       val dl = docs.select(col("doc_id"), size(col("t")).cast("bigint").as("dl"))
@@ -592,14 +822,35 @@ object LlmPipeline extends Family {
         .withColumn("bm25", col("score_micro").cast("double") / 1e6)
         .orderBy(col("score_micro").desc, col("doc_id"))
         .limit(20)
-    }),
+    },
+      // Okapi BM25 replayed term-for-term; the single ROUND to micro-units
+      // happens on identically-shaped double expressions in both engines.
+      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+        |st AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dl),
+        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok
+        |       WHERE w IN ('vector', 'stream', 'hash') GROUP BY doc_id, w),
+        |df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+        |sc AS (SELECT tf.doc_id,
+        |         CAST(ROUND(
+        |           ln((CAST(st.n_docs AS DOUBLE) - df.df + 0.5) / (df.df + 0.5) + 1.0)
+        |           * (tf.tf * 2.2)
+        |           / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl /
+        |              (CAST(st.sum_dl AS DOUBLE) / CAST(st.n_docs AS DOUBLE))))
+        |           * 1e6) AS BIGINT) AS s_micro
+        |       FROM tf JOIN dl USING (doc_id) JOIN df USING (w) CROSS JOIN st)
+        |SELECT doc_id, COUNT(*) AS n_q_terms,
+        |  CAST(SUM(s_micro) AS BIGINT) AS score_micro,
+        |  CAST(SUM(s_micro) AS DOUBLE) / 1e6 AS bm25
+        |FROM sc GROUP BY doc_id
+        |ORDER BY score_micro DESC, doc_id LIMIT 20""".stripMargin),
 
     // Cross-modal pair assembly (the CLIP-style training-pair stage):
     // text rows joined to their embedding rows by id, emitting per-pair
     // features (token count, L2 norm, mean element, label). One equi
     // join; both element folds are sequential left-to-right in both
     // engines, rounded at the boundary.
-    "mm_embed_join" -> ((s, d) =>
+    Op("mm_embed_join", (s, d) =>
       Tables.documents(s, d)
         .join(Tables.embeddings(s, d), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("lang"),
@@ -610,34 +861,22 @@ object LlmPipeline extends Family {
           round(expr("aggregate(embedding, 0D, (a, x) -> a + CAST(x AS DOUBLE))") / 64, 6)
             .as("emb_mean"),
           col("label"))
-        .orderBy("doc_id"))
+        .orderBy("doc_id"),
+      """SELECT d.doc_id AS doc_id, d.lang AS lang,
+        |  CAST(len(string_split(d.text, ' ')) AS INT) AS n_toks,
+        |  ROUND(sqrt(list_sum(list_transform(e.embedding,
+        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS emb_norm,
+        |  ROUND(list_sum(list_transform(e.embedding,
+        |    x -> CAST(x AS DOUBLE))) / 64, 6) AS emb_mean,
+        |  e.label AS label
+        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
+        |ORDER BY doc_id""".stripMargin)
   )
 
   /** Indirection so the shared pair generator lives with its family in
     * LlmOps but this object reads naturally. */
   private def nearPairsOf(s: SparkSession, d: String): DataFrame =
     LlmOps.nearPairs(s, d)
-
-  /** The BPE training loop shared by `llm_bpe_merge` (reports the learned
-    * merges) and `llm_bpe_encode` (applies them): `BpeRounds` rounds of
-    * count-adjacent-pairs → deterministic argmax (freq, pair) → greedy
-    * leftmost non-overlapping merge, all over the word-frequency ROLLUP
-    * (vocab-sized, corpus-weighted — the corpus is scanned exactly once
-    * for the rollup, every round after that is O(vocab)). The merge
-    * application is a codegen'd aggregate() fold over the symbol array;
-    * per-round driver sync is one scalar collect (the argmax pair), the
-    * `llm_dedup_cluster` iterative shape, with localCheckpoint truncating
-    * lineage between rounds. Returns the final per-word symbol table
-    * (w, c, syms) and one row per round: (round, a, b, freq, corpus
-    * symbol count after the merge — monotone decreasing, asserted in
-    * LlmScaleSpec). */
-  /** Both bpe ops (merge reports the rounds, encode applies them) share
-    * one training run per (JVM, sf) — the trained artifact is exactly the
-    * thing a pipeline persists, so re-training it per query was pure
-    * waste. The cached syms frame is a localCheckpoint (session-scoped,
-    * like every other cache in this JVM). */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap[String, (DataFrame, Seq[(Int, String, String, Long, Long)])]()
 
   private def bpeTrain(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, String, String, Long, Long)]) =
@@ -685,14 +924,6 @@ object LlmPipeline extends Family {
     }
     (syms, out.toSeq)
   }
-
-  /** The shared shingle/pair CTEs (ONE copy, in LlmOps next to
-    * `nearPairs`) plus the thresholded pair set. */
-  private val pairsSql =
-    s"""${LlmOps.nearPairsSqlCtes},
-       |pairs AS (SELECT a, b FROM inter
-       |          JOIN sz sa ON a = sa.doc_id JOIN sz sb ON b = sb.doc_id
-       |          WHERE ROUND(c * 1.0 / (sa.n + sb.n - c), 4) >= 0.5)""".stripMargin
 
   /** Chained-CTE replay of the BPE training loop (shared by the merge and
     * encode oracles): round k recomputes the argmax pair over r(k-1) and
@@ -754,273 +985,4 @@ object LlmPipeline extends Family {
        |SELECT sym, CAST(SUM(c) AS BIGINT) AS n_occurrences,
        |  CAST(length(sym) AS INT) AS sym_len, length(sym) > 1 AS is_merged
        |FROM v GROUP BY sym ORDER BY n_occurrences DESC, sym""".stripMargin
-
-  val oracles: Map[String, String] = unique(
-    "llm_bpe_merge" -> bpeMergeOracle,
-    "llm_bpe_encode" -> bpeEncodeOracle,
-    "llm_bpe_vocab" -> bpeVocabOracle,
-
-    // The shared near-pair CTEs + per-source-pair rollup.
-    "llm_cross_source_leakage" ->
-      s"""WITH $pairsSql,
-         |lab AS (SELECT LEAST(da.source, db.source) AS src_a,
-         |    GREATEST(da.source, db.source) AS src_b
-         |  FROM pairs
-         |  JOIN documents da ON pairs.a = da.doc_id
-         |  JOIN documents db ON pairs.b = db.doc_id)
-         |SELECT src_a, src_b, COUNT(*) AS n_pairs, src_a <> src_b AS is_cross
-         |FROM lab GROUP BY 1, 2 ORDER BY src_a, src_b""".stripMargin,
-
-    // The 64-char turn segmentation and whitespace token counts replayed
-    // with the same 1-based substring window.
-    "llm_loss_masking" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
-        |turns AS (SELECT doc_id,
-        |    CAST(unnest(generate_series(0, (len + 63) // 64 - 1)) AS INT) AS t,
-        |    text FROM d),
-        |tk AS (SELECT doc_id, t,
-        |    CAST(len(string_split(substring(text, t * 64 + 1, 64), ' ')) AS BIGINT)
-        |      AS toks
-        |  FROM turns)
-        |SELECT doc_id, COUNT(*) AS n_turns,
-        |  CAST(SUM(toks) AS BIGINT) AS toks_total,
-        |  CAST(SUM(CASE WHEN t % 2 = 1 THEN toks ELSE 0 END) AS BIGINT)
-        |    AS toks_trainable,
-        |  CAST((SUM(CASE WHEN t % 2 = 1 THEN toks ELSE 0 END) * 1000000)
-        |    // SUM(toks) AS BIGINT) AS trainable_ppm
-        |FROM tk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // The backoff branch and its integer arithmetic replayed exactly.
-    "llm_trigram_backoff" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS t FROM documents),
-        |bi AS (SELECT t[i] AS w1, t[i+1] AS w2, CAST(COUNT(*) AS BIGINT) AS c2
-        |  FROM t, unnest(generate_series(1, len(t) - 1)) u(i)
-        |  WHERE len(t) >= 2 GROUP BY 1, 2),
-        |uni AS (SELECT unnest(t) AS w FROM t),
-        |uc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c1 FROM uni GROUP BY 1),
-        |n AS (SELECT CAST(SUM(c1) AS BIGINT) AS n FROM uc),
-        |sc AS (SELECT w1, w2, c2,
-        |    CAST(CASE WHEN c2 >= 3 THEN (c2 * 1000000) // cx.c1
-        |         ELSE (4 * ((cw.c1 * 1000000) // n.n)) // 10 END AS BIGINT)
-        |      AS score_micro,
-        |    c2 < 3 AS used_backoff
-        |  FROM bi JOIN uc cx ON bi.w1 = cx.w JOIN uc cw ON bi.w2 = cw.w, n)
-        |SELECT * FROM (SELECT * FROM sc WHERE NOT used_backoff
-        |               ORDER BY score_micro DESC, w1, w2 LIMIT 25)
-        |UNION ALL
-        |SELECT * FROM (SELECT * FROM sc WHERE used_backoff
-        |               ORDER BY score_micro DESC, w1, w2 LIMIT 25)""".stripMargin,
-    // Transitive closure by recursive CTE; MIN over the closure is the
-    // same component-minimum the label propagation converges to.
-    "llm_dedup_cluster" ->
-      s"""WITH RECURSIVE
-         |$pairsSql,
-         |edges AS (SELECT a, b FROM pairs UNION ALL SELECT b AS a, a AS b FROM pairs),
-         |reach AS (SELECT a AS src, a AS dst FROM edges
-         |          UNION
-         |          SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-         |lbl AS (SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src),
-         |sizes AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lbl GROUP BY cluster_id)
-         |SELECT doc_id, l.cluster_id, cluster_size
-         |FROM lbl l JOIN sizes z ON l.cluster_id = z.cluster_id
-         |ORDER BY doc_id""".stripMargin,
-
-    "llm_contamination" ->
-      s"""WITH dd AS (SELECT doc_id,
-         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
-         |    string_split(text, ' ') AS t FROM documents),
-         |sh AS (SELECT doc_id, u, unnest(list_distinct(list_transform(
-         |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sg
-         |       FROM dd),
-         |train AS (SELECT DISTINCT sg AS tsg FROM sh WHERE u < $TrainCap),
-         |test AS (SELECT doc_id, sg FROM sh WHERE u >= $TestFloor)
-         |SELECT test.doc_id, COUNT(*) AS n_shingles,
-         |  CAST(SUM(CASE WHEN tsg IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
-         |  ROUND(CAST(SUM(CASE WHEN tsg IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |    / CAST(COUNT(*) AS DOUBLE), 4) AS contamination
-         |FROM test LEFT JOIN train ON test.sg = train.tsg
-         |GROUP BY test.doc_id ORDER BY doc_id""".stripMargin,
-
-    "llm_repetition" ->
-      """WITH x AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, len(t) AS n_tokens,
-        |    list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1]) AS bi,
-        |    list_transform(generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) AS tri
-        |  FROM x)
-        |SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-        |  ROUND((len(bi) - len(list_distinct(bi))) / CAST(len(bi) AS DOUBLE), 4) AS dup_bigram_frac,
-        |  ROUND((len(tri) - len(list_distinct(tri))) / CAST(len(tri) AS DOUBLE), 4) AS dup_trigram_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "llm_chunk" ->
-      """WITH x AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |y AS (SELECT doc_id, t, len(t) AS n,
-        |    1 + CASE WHEN len(t) > 64 THEN ((len(t) - 64) + 47) // 48 ELSE 0 END AS nc
-        |  FROM x),
-        |z AS (SELECT doc_id, t, n, unnest(generate_series(0, nc - 1)) AS chunk_idx FROM y)
-        |SELECT doc_id, CAST(n AS INT) AS n_tokens, CAST(chunk_idx AS INT) AS chunk_idx,
-        |  CAST(chunk_idx * 48 AS INT) AS start_tok,
-        |  CAST(least(64, n - chunk_idx * 48) AS INT) AS chunk_len,
-        |  t[chunk_idx * 48 + 1] AS first_tok,
-        |  t[chunk_idx * 48 + least(64, n - chunk_idx * 48)] AS last_tok
-        |FROM z ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "llm_bigram_lm" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS t FROM documents),
-        |bi AS (SELECT t[i] AS w1, t[i+1] AS w2, COUNT(*) AS c12
-        |       FROM t, unnest(generate_series(1, len(t) - 1)) u(i)
-        |       GROUP BY t[i], t[i+1]),
-        |c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM bi GROUP BY w1),
-        |top1 AS (SELECT *, row_number() OVER (ORDER BY c1 DESC, w1 ASC) AS r1 FROM c1),
-        |j AS (SELECT bi.w1, bi.w2, bi.c12, top1.c1,
-        |        ROUND(bi.c12 / CAST(top1.c1 AS DOUBLE), 6) AS p,
-        |        row_number() OVER (PARTITION BY bi.w1 ORDER BY bi.c12 DESC, bi.w2 ASC) AS rk
-        |      FROM bi JOIN top1 ON bi.w1 = top1.w1 WHERE top1.r1 <= 10)
-        |SELECT w1, CAST(rk AS INT) AS rk, w2, c12, c1, p
-        |FROM j WHERE rk <= 3 ORDER BY w1, rk""".stripMargin,
-
-    "llm_vocab_coverage" ->
-      """WITH tf AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |f AS (SELECT term, COUNT(*) AS freq FROM tf GROUP BY term),
-        |tot AS (SELECT CAST(SUM(freq) AS BIGINT) AS total FROM f),
-        |r AS (SELECT term, freq,
-        |        row_number() OVER (ORDER BY freq DESC, term ASC) AS rank,
-        |        CAST(SUM(freq) OVER (ORDER BY freq DESC, term ASC
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |      FROM f)
-        |SELECT CAST(rank AS INT) AS rank, term, freq,
-        |  ROUND(cum / CAST(total AS DOUBLE), 6) AS coverage
-        |FROM r CROSS JOIN tot WHERE rank <= 100 ORDER BY rank""".stripMargin,
-
-    "llm_top_terms" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |nd AS (SELECT COUNT(*) AS nd FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf,
-        |    ROUND((tf / CAST(dl AS DOUBLE)) * (nd / CAST(df AS DOUBLE)), 6) AS score
-        |  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-        |       JOIN df ON tf.term = df.term CROSS JOIN nd),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |        ORDER BY score DESC, term ASC) AS rank FROM scored)
-        |SELECT doc_id, CAST(rank AS INT) AS rank, term, score, tf
-        |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "llm_corpus_stats" ->
-      """WITH t AS (SELECT lang, source, text,
-        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |           FROM documents)
-        |SELECT lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-        |  COUNT(DISTINCT source) AS n_sources,
-        |  COUNT(DISTINCT text) AS n_distinct_texts,
-        |  ROUND(1.0 - COUNT(DISTINCT text) / CAST(COUNT(*) AS DOUBLE), 6) AS dup_rate,
-        |  CAST(SUM(n_tok) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_tok,
-        |  CAST(MIN(n_tok) AS BIGINT) AS min_tok,
-        |  CAST(MAX(n_tok) AS BIGINT) AS max_tok
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "llm_ngram_overlap" ->
-      s"""WITH dd AS (SELECT doc_id,
-         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
-         |    string_split(text, ' ') AS t FROM documents),
-         |sh AS (SELECT doc_id, u, unnest(list_distinct(list_transform(
-         |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sg
-         |       FROM dd WHERE len(t) > 2),
-         |test AS (SELECT doc_id AS test_id, sg FROM sh WHERE u >= $TestFloor),
-         |train AS (SELECT doc_id AS train_id, sg FROM sh WHERE u < $TrainCap),
-         |ts AS (SELECT test_id, COUNT(*) AS n_test FROM test GROUP BY test_id),
-         |p AS (SELECT test_id, train_id, COUNT(*) AS n_shared
-         |      FROM test JOIN train USING (sg) GROUP BY test_id, train_id)
-         |SELECT p.test_id AS test_id, p.train_id AS train_id, p.n_shared AS n_shared,
-         |  ROUND(p.n_shared / CAST(ts.n_test AS DOUBLE), 4) AS overlap
-         |FROM p JOIN ts ON p.test_id = ts.test_id
-         |WHERE ROUND(p.n_shared / CAST(ts.n_test AS DOUBLE), 4) >= 0.2
-         |ORDER BY p.test_id, p.train_id""".stripMargin,
-
-    "llm_dedup_url" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    lower(source) || '.example.com/' || lang || '/doc/'
-        |      || (doc_id % 100) AS curl
-        |  FROM documents)
-        |SELECT curl, COUNT(*) AS n_dups, MIN(doc_id) AS keeper
-        |FROM c GROUP BY curl HAVING COUNT(*) > 1
-        |ORDER BY curl""".stripMargin,
-
-    "llm_ppl_filter" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |bi AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
-        |       FROM t, unnest(generate_series(1, len(t) - 1)) u(i)),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi GROUP BY w1, w2),
-        |c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM c12 GROUP BY w1),
-        |sc AS (SELECT bi.doc_id,
-        |         CAST(ROUND(-ln(CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE)) * 1e6)
-        |           AS BIGINT) AS nll_micro
-        |       FROM bi JOIN c12 USING (w1, w2) JOIN c1 USING (w1))
-        |SELECT doc_id, COUNT(*) AS n_bi,
-        |  CAST(SUM(nll_micro) AS BIGINT) AS sum_nll,
-        |  CAST(SUM(nll_micro) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1e6) AS avg_nll
-        |FROM sc GROUP BY doc_id
-        |ORDER BY avg_nll DESC, doc_id LIMIT 25""".stripMargin,
-
-    // Okapi BM25 replayed term-for-term; the single ROUND to micro-units
-    // happens on identically-shaped double expressions in both engines.
-    "llm_bm25" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |st AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl FROM dl),
-        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok
-        |       WHERE w IN ('vector', 'stream', 'hash') GROUP BY doc_id, w),
-        |df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(ROUND(
-        |           ln((CAST(st.n_docs AS DOUBLE) - df.df + 0.5) / (df.df + 0.5) + 1.0)
-        |           * (tf.tf * 2.2)
-        |           / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl /
-        |              (CAST(st.sum_dl AS DOUBLE) / CAST(st.n_docs AS DOUBLE))))
-        |           * 1e6) AS BIGINT) AS s_micro
-        |       FROM tf JOIN dl USING (doc_id) JOIN df USING (w) CROSS JOIN st)
-        |SELECT doc_id, COUNT(*) AS n_q_terms,
-        |  CAST(SUM(s_micro) AS BIGINT) AS score_micro,
-        |  CAST(SUM(s_micro) AS DOUBLE) / 1e6 AS bm25
-        |FROM sc GROUP BY doc_id
-        |ORDER BY score_micro DESC, doc_id LIMIT 20""".stripMargin,
-
-    "llm_dedup_span" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sp AS (SELECT doc_id, array_to_string(t[(8*i+1):(8*i+8)], ' ') AS span
-        |       FROM t, unnest(generate_series(0,
-        |         CAST(floor(len(t) / 8) AS INT) - 1)) u(i)),
-        |dup AS (SELECT span FROM sp GROUP BY span
-        |        HAVING COUNT(DISTINCT doc_id) > 1),
-        |tot AS (SELECT doc_id, COUNT(*) AS n_spans FROM sp GROUP BY doc_id)
-        |SELECT sp.doc_id AS doc_id, tot.n_spans AS n_spans,
-        |  COUNT(*) AS n_shared,
-        |  ROUND(COUNT(*) / CAST(tot.n_spans AS DOUBLE), 4) AS shared_frac
-        |FROM sp JOIN dup USING (span) JOIN tot ON sp.doc_id = tot.doc_id
-        |GROUP BY sp.doc_id, tot.n_spans
-        |ORDER BY doc_id""".stripMargin,
-
-    "llm_bpe_pairs" ->
-      """WITH wf AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        |wc AS (SELECT w, COUNT(*) AS c FROM wf GROUP BY w)
-        |SELECT w[i:i+1] AS pair, CAST(SUM(c) AS BIGINT) AS freq
-        |FROM wc, unnest(generate_series(1, length(w) - 1)) u(i)
-        |WHERE length(w) >= 2
-        |GROUP BY 1 ORDER BY freq DESC, pair LIMIT 20""".stripMargin,
-
-    "mm_embed_join" ->
-      """SELECT d.doc_id AS doc_id, d.lang AS lang,
-        |  CAST(len(string_split(d.text, ' ')) AS INT) AS n_toks,
-        |  ROUND(sqrt(list_sum(list_transform(e.embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS emb_norm,
-        |  ROUND(list_sum(list_transform(e.embedding,
-        |    x -> CAST(x AS DOUBLE))) / 64, 6) AS emb_mean,
-        |  e.label AS label
-        |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
-        |ORDER BY doc_id""".stripMargin
-  )
 }

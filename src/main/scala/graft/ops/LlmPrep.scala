@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SparkEntry, Tables}
 
 /** Training-data preparation operators (round 5): context-window sequence
   * packing, PII redaction, per-stratum hash sampling, and multimodal frame
@@ -35,14 +35,34 @@ object LlmPrep extends Family {
   private val FrameLen = 32
   private val Stride = 4
 
-  private val mainQueries: Seq[(String, Q)] = Seq(
+  /** Shard byte budget for `mm_shard_pack` (webdataset-style): small at
+    * fixture scale so every bucket yields several shards; at 100 TB the
+    * same code runs with a 100 MB–1 GB budget and more buckets. */
+  private val ShardBytes = 4096L
+
+  /** Per-record container overhead (the tar-header shape): payload =
+    * n_chars + header. */
+  private val RecHeader = 64L
+
+  /** Band-bucket population cap for `mm_dedup_phash` — the dfCap law
+    * applied to perceptual-hash buckets: a band value shared by more docs
+    * than this is a degenerate key (flat-color thumbnails, boilerplate
+    * frames) and is dropped from candidate generation, keeping the
+    * candidate join sub-quadratic on any corpus. */
+  private val PhashBucketCap = 64L
+
+  /** Scene-cut hamming threshold (bits of the 8-bit frame fingerprint
+    * that must differ before a frame starts a new shot). */
+  private val SceneCutBits = 5
+
+  val ops: Seq[Op] = Seq(
     // Sequence packing (concat-then-split): docs are ordered by a
     // layout-independent hash inside 32 independent buckets, token counts
     // prefix-summed per bucket, and each doc assigned to the context
     // window its first token lands in. Per-pack rollup reports how full
     // each window is. The window partitions on the bucket, so no global
     // single-task prefix sum exists anywhere in the plan.
-    "llm_pack_sequences" -> ((s, d) => {
+    Op("llm_pack_sequences", (s, d) => {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("n_tok"),
@@ -59,14 +79,27 @@ object LlmPrep extends Family {
         .select(col("pack_id"), col("n_docs"), col("n_tokens"), col("first_doc"),
           round(col("n_tokens") / lit(Ctx.toDouble), 4).as("fill"))
         .orderBy("pack_id")
-    }),
+    },
+      s"""WITH t AS (SELECT doc_id,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
+         |  FROM documents),
+         |b AS (SELECT *, u % 32 AS bucket FROM t),
+         |c AS (SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY bucket ORDER BY u, doc_id
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |      FROM b),
+         |p AS (SELECT *, bucket * $ShardIdSpan + (cum - n_tok) // $Ctx AS pack_id FROM c)
+         |SELECT pack_id, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+         |  MIN(doc_id) AS first_doc,
+         |  ROUND(CAST(SUM(n_tok) AS BIGINT) / ${Ctx.toDouble}, 4) AS fill
+         |FROM p GROUP BY pack_id ORDER BY pack_id""".stripMargin),
 
     // PII redaction: deterministic synthetic PII (an email and a phone
     // derived from doc_id — the corpus itself is synthetic words) is
     // appended, then scrubbed by the same two regexes in both engines.
     // Pure projection; the regex classes used ([...], {n,}, +) behave
     // identically under Java regex and RE2.
-    "llm_pii_redact" -> ((s, d) =>
+    Op("llm_pii_redact", (s, d) =>
       Tables.documents(s, d)
         .withColumn("aug", concat(col("text"),
           lit(" contact "), col("source"), col("doc_id").cast("string"),
@@ -83,13 +116,29 @@ object LlmPrep extends Family {
           regexp_count(col("aug"), lit("\\+1-555-[0-9]{4}")).as("n_phones"),
           length(col("redacted")).as("red_len"),
           expr("right(redacted, 30)").as("tail"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      """WITH a AS (SELECT doc_id,
+        |    text || ' contact ' || source || CAST(doc_id AS VARCHAR)
+        |      || '@example.com call +1-555-'
+        |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS aug
+        |  FROM documents),
+        |r AS (SELECT doc_id, aug,
+        |    regexp_replace(
+        |      regexp_replace(aug, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |      '\+1-555-[0-9]{4}', '<PHONE>', 'g') AS redacted
+        |  FROM a)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(aug, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
+        |  CAST(len(regexp_extract_all(aug, '\+1-555-[0-9]{4}')) AS INT) AS n_phones,
+        |  CAST(length(redacted) AS INT) AS red_len,
+        |  right(redacted, 30) AS tail
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // Stratified sampling: per-language rates applied through the shared
     // md5 key, so the sample is reproducible across engines, layouts, and
     // scale factors (a doc's fate depends only on its id). Conditional
     // aggregation keeps it to one shuffle on the stratum key.
-    "llm_sample_stratified" -> ((s, d) =>
+    Op("llm_sample_stratified", (s, d) =>
       Tables.documents(s, d)
         .withColumn("u", expr(md5Bits("CAST(doc_id AS STRING)", 8)))
         .withColumn("rate_milli",
@@ -103,7 +152,17 @@ object LlmPrep extends Family {
           max(col("rate_milli")).as("rate_milli"))
         .select(col("lang"), col("n_total"), col("n_sampled"), col("rate_milli"),
           round(col("n_sampled") / col("n_total").cast("double"), 4).as("frac"))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      s"""WITH t AS (SELECT lang,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
+        |    CASE WHEN lang = 'en' THEN 500 WHEN lang = 'de' THEN 250 ELSE 100 END AS rate_milli
+        |  FROM documents)
+        |SELECT lang, COUNT(*) AS n_total,
+        |  CAST(SUM(CASE WHEN u % 1000 < rate_milli THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
+        |  CAST(MAX(rate_milli) AS BIGINT) AS rate_milli,
+        |  ROUND(CAST(SUM(CASE WHEN u % 1000 < rate_milli THEN 1 ELSE 0 END) AS BIGINT)
+        |    / CAST(COUNT(*) AS DOUBLE), 4) AS frac
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
 
     // Multimodal frame sampling: treat each doc's payload as an opaque
     // byte stream (the real decode is a stubbed codec — mm_decode_meta
@@ -111,7 +170,7 @@ object LlmPrep extends Family {
     // frames, keep every 4th, and fingerprint each kept frame. This is
     // the video keyframe-extraction shape: projection + bounded explode,
     // no shuffle until a consumer aggregates.
-    "mm_frame_sample" -> ((s, d) =>
+    Op("mm_frame_sample", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 20 === 0)
         .select(col("doc_id"), col("text"), length(col("text")).as("len"))
         .withColumn("n_frames", expr(s"CAST((len + ${FrameLen - 1}) DIV $FrameLen AS INT)"))
@@ -121,7 +180,19 @@ object LlmPrep extends Family {
           (col("frame_idx") * FrameLen).as("off"),
           least(lit(FrameLen), col("len") - col("frame_idx") * FrameLen).cast("int").as("frame_len"),
           md5(expr(s"CAST(substring(text, frame_idx * $FrameLen + 1, $FrameLen) AS BINARY)")).as("frame_md5"))
-        .orderBy("doc_id", "frame_idx")),
+        .orderBy("doc_id", "frame_idx"),
+      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
+        |           WHERE doc_id % 20 = 0),
+        |f AS (SELECT doc_id, text, len,
+        |        CAST((len + 31) // 32 AS INT) AS n_frames FROM d),
+        |x AS (SELECT doc_id, text, len,
+        |        CAST(unnest(generate_series(0, n_frames - 1, 4)) AS INT) AS frame_idx
+        |      FROM f)
+        |SELECT doc_id, frame_idx,
+        |  frame_idx * 32 AS off,
+        |  CAST(least(32, len - frame_idx * 32) AS INT) AS frame_len,
+        |  md5(substring(text, frame_idx * 32 + 1, 32)) AS frame_md5
+        |FROM x ORDER BY doc_id, frame_idx""".stripMargin),
 
     // Fuzzy (edit-distance) dedup — the entity-resolution shape: block
     // on an 8-char prefix so candidate generation is a bucketed
@@ -130,7 +201,7 @@ object LlmPrep extends Family {
     // key), then score candidates with levenshtein over a 40-char
     // fingerprint. Edit distance is engine-exact, so the oracle replays
     // the identical algorithm.
-    "llm_dedup_fuzzy" -> ((s, d) => {
+    Op("llm_dedup_fuzzy", (s, d) => {
       val p = Tables.documents(s, d)
         .select(col("doc_id"), substring(col("text"), 1, 8).as("b"),
           substring(col("text"), 1, 40).as("pre"))
@@ -140,7 +211,14 @@ object LlmPrep extends Family {
           levenshtein(col("x.pre"), col("y.pre")).cast("bigint").as("lev"))
         .where(col("lev") <= 18)
         .orderBy("a", "b_id")
-    }),
+    },
+      """WITH p AS (SELECT doc_id, substring(text, 1, 8) AS b,
+        |             substring(text, 1, 40) AS pre FROM documents)
+        |SELECT x.doc_id AS a, y.doc_id AS b_id,
+        |  CAST(levenshtein(x.pre, y.pre) AS BIGINT) AS lev
+        |FROM p x JOIN p y ON x.b = y.b AND x.doc_id < y.doc_id
+        |WHERE levenshtein(x.pre, y.pre) <= 18
+        |ORDER BY a, b_id""".stripMargin),
 
     // Int8 embedding quantization (the ANN-index compression stage: 4×
     // memory cut before IVF/LSH bucketing). Symmetric per-vector scale
@@ -148,7 +226,7 @@ object LlmPrep extends Family {
     // half-way rule is a single exact IEEE tree both engines share.
     // All emitted aggregates of q are integers; pure projection, zero
     // shuffle.
-    "llm_embed_quantize" -> ((s, d) =>
+    Op("llm_embed_quantize", (s, d) =>
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           size(col("embedding")).cast("bigint").as("dim"),
@@ -160,14 +238,30 @@ object LlmPrep extends Family {
           expr("aggregate(q, CAST(0 AS BIGINT), (acc, v) -> acc + v)").as("q_sum"),
           expr("aggregate(q, CAST(0 AS BIGINT), (acc, v) -> acc + v * v)").as("q_norm2"),
           expr("aggregate(q, CAST(0 AS BIGINT), (acc, v) -> acc + CAST(abs(v) = 127 AS BIGINT))").as("n_sat"))
-        .orderBy("vec_id")),
+        .orderBy("vec_id"),
+      """WITH m AS (
+        |  SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
+        |    CAST(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        |      list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))),
+        |      (acc, x) -> greatest(acc, x)) AS DOUBLE) AS max_abs,
+        |    embedding
+        |  FROM embeddings),
+        |q AS (SELECT vec_id, dim, max_abs,
+        |        list_transform(embedding,
+        |          x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / max_abs + 0.5) AS BIGINT)) AS qv
+        |      FROM m WHERE max_abs > 0)
+        |SELECT vec_id, dim, max_abs,
+        |  CAST(list_sum(qv) AS BIGINT) AS q_sum,
+        |  CAST(list_sum(list_transform(qv, v -> v * v)) AS BIGINT) AS q_norm2,
+        |  CAST(list_sum(list_transform(qv, v -> CAST(abs(v) = 127 AS BIGINT))) AS BIGINT) AS n_sat
+        |FROM q ORDER BY vec_id""".stripMargin),
 
     // 2-D patchification (the ViT patch-embedding plumbing): the opaque
     // payload is a raster of 32-byte rows; each 8×8 patch concatenates
     // its 8 row-slices and fingerprints them. Bounded two-level explode
     // (patch-row × patch-col), per-row projection, no shuffle — at 100 TB
     // this is exactly the shape feeding a patch-embedding UDF batch.
-    "mm_patchify" -> ((s, d) =>
+    Op("mm_patchify", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 20 === 1)
         .select(col("doc_id"), col("text"), length(col("text")).as("len"))
         // patch rows cover ceil(len/256) bands of 8 raster rows each
@@ -178,19 +272,23 @@ object LlmPrep extends Family {
         .select(col("doc_id"), col("pr"), col("pc"),
           length(col("patch")).as("patch_len"), md5(expr("CAST(patch AS BINARY)")).as("patch_md5"))
         .where(col("patch_len") > 0)
-        .orderBy("doc_id", "pr", "pc"))
-  )
-
-  /** Shard byte budget for `mm_shard_pack` (webdataset-style): small at
-    * fixture scale so every bucket yields several shards; at 100 TB the
-    * same code runs with a 100 MB–1 GB budget and more buckets. */
-  private val ShardBytes = 4096L
-
-  /** Per-record container overhead (the tar-header shape): payload =
-    * n_chars + header. */
-  private val RecHeader = 64L
-
-  private val shardQueries: Seq[(String, Q)] = Seq(
+        .orderBy("doc_id", "pr", "pc"),
+      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
+        |           WHERE doc_id % 20 = 1),
+        |pr AS (SELECT doc_id, text, len,
+        |         CAST(unnest(generate_series(0, CAST((len + 255) // 256 AS INT) - 1)) AS INT) AS pr
+        |       FROM d),
+        |g AS (SELECT doc_id, text, len, pr,
+        |        CAST(unnest(generate_series(0, 3)) AS INT) AS pc
+        |      FROM pr),
+        |p AS (SELECT doc_id, pr, pc,
+        |        array_to_string(list_transform(generate_series(0, 7),
+        |          r -> substring(text, (pr * 8 + r) * 32 + pc * 8 + 1, 8)), '') AS patch
+        |      FROM g)
+        |SELECT doc_id, pr, pc, CAST(length(patch) AS INT) AS patch_len,
+        |  md5(patch) AS patch_md5
+        |FROM p WHERE length(patch) > 0
+        |ORDER BY doc_id, pr, pc""".stripMargin),
     // Webdataset-style shard packing — the byte-budget twin of
     // llm_pack_sequences' token packing: records (payload + fixed header)
     // are hash-ordered inside 8 independent bucket streams, prefix-summed,
@@ -199,7 +297,7 @@ object LlmPrep extends Family {
     // dataloader consumes. The window partitions on the bucket, so no
     // global single-task prefix sum exists; at 100 TB bucket count scales
     // with the cluster and each shard's manifest row stays O(1) state.
-    "mm_shard_pack" -> ((s, d) => {
+    Op("mm_shard_pack", (s, d) => {
       val rec = Tables.documents(s, d)
         .select(col("doc_id"),
           (col("n_chars").cast("bigint") + RecHeader).as("bytes"),
@@ -215,7 +313,21 @@ object LlmPrep extends Family {
           min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
         .withColumn("fill_milli", expr(s"(n_bytes * 1000) DIV $ShardBytes"))
         .orderBy("shard_id")
-    }),
+    },
+      // Bucketed byte-budget packing replayed with the same constants.
+      s"""WITH t AS (SELECT doc_id, CAST(n_chars + $RecHeader AS BIGINT) AS bytes,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
+         |  FROM documents),
+         |b AS (SELECT *, u % 8 AS bucket FROM t),
+         |c AS (SELECT *, CAST(SUM(bytes) OVER (PARTITION BY bucket ORDER BY u, doc_id
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |      FROM b),
+         |p AS (SELECT *, bucket * $ShardIdSpan + (cum - bytes) // $ShardBytes AS shard_id
+         |      FROM c)
+         |SELECT shard_id, COUNT(*) AS n_docs, CAST(SUM(bytes) AS BIGINT) AS n_bytes,
+         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
+         |  (CAST(SUM(bytes) AS BIGINT) * 1000) // $ShardBytes AS fill_milli
+         |FROM p GROUP BY shard_id ORDER BY shard_id""".stripMargin),
 
     // Aspect-ratio bucketing (the SDXL-style resolution-bucket batcher):
     // synthetic (w, h) image metadata derived from the shared hash (the
@@ -228,7 +340,7 @@ object LlmPrep extends Family {
     // pad ppm per bucket) is the batch-efficiency signal that justifies
     // bucketing over naive pad-to-max. Pure projection + one 5-row
     // rollup; zero shuffle before the final tiny aggregate.
-    "mm_resolution_bucket" -> ((s, d) =>
+    Op("mm_resolution_bucket", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("w", lit(256L) + (col("u") % 8) * 128L)
@@ -256,7 +368,37 @@ object LlmPrep extends Family {
           sum(expr("w * h")).as("src_px"),
           sum(expr("tw * th - sw * sh")).as("pad_px"))
         .withColumn("pad_ppm", expr("(pad_px * 1000000) DIV (n_images * tw * th)"))
-        .orderBy("bucket")),
+        .orderBy("bucket"),
+      // Same synthetic geometry, same integer resize/pad accounting.
+      s"""WITH g AS MATERIALIZED (SELECT doc_id,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
+        |  FROM documents),
+        |m AS (SELECT doc_id, 256 + (u % 8) * 128 AS w,
+        |    256 + ((u // 8) % 8) * 128 AS h FROM g),
+        |r AS (SELECT *, (w * 1000) // h AS ratio_milli FROM m),
+        |b AS (SELECT *,
+        |    CASE WHEN ratio_milli < 667 THEN 'portrait_tall'
+        |         WHEN ratio_milli < 910 THEN 'portrait'
+        |         WHEN ratio_milli <= 1100 THEN 'square'
+        |         WHEN ratio_milli <= 1500 THEN 'landscape'
+        |         ELSE 'landscape_wide' END AS bucket FROM r),
+        |t AS (SELECT *,
+        |    CAST(CASE bucket WHEN 'portrait_tall' THEN 768 WHEN 'portrait' THEN 832
+        |      WHEN 'square' THEN 1024 WHEN 'landscape' THEN 1152
+        |      ELSE 1344 END AS BIGINT) AS tw,
+        |    CAST(CASE bucket WHEN 'portrait_tall' THEN 1344 WHEN 'portrait' THEN 1152
+        |      WHEN 'square' THEN 1024 WHEN 'landscape' THEN 832
+        |      ELSE 768 END AS BIGINT) AS th FROM b),
+        |sc AS (SELECT *, LEAST((tw * 1000) // w, (th * 1000) // h) AS scale_milli
+        |  FROM t),
+        |f AS (SELECT *, (w * scale_milli) // 1000 AS sw,
+        |    (h * scale_milli) // 1000 AS sh FROM sc)
+        |SELECT bucket, tw, th, COUNT(*) AS n_images,
+        |  CAST(SUM(w * h) AS BIGINT) AS src_px,
+        |  CAST(SUM(tw * th - sw * sh) AS BIGINT) AS pad_px,
+        |  (CAST(SUM(tw * th - sw * sh) AS BIGINT) * 1000000)
+        |    // (COUNT(*) * tw * th) AS pad_ppm
+        |FROM f GROUP BY bucket, tw, th ORDER BY bucket""".stripMargin),
 
     // Deterministic weighted interleave (the mixture SCHEDULER next to
     // llm_data_mixture's epoch budgeting): weighted fair queueing —
@@ -268,7 +410,7 @@ object LlmPrep extends Family {
     // ordered limit (TakeOrderedAndProject — per-partition heaps + one
     // tiny merge, never a full sort); the final position column is a
     // window over the already-limited N rows (driver-scale, documented).
-    "llm_interleave_mixture" -> ((s, d) => {
+    Op("llm_interleave_mixture", (s, d) => {
       val seq = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"))
         .withColumn("wt", expr(
@@ -282,7 +424,21 @@ object LlmPrep extends Family {
           Window.orderBy("vtime", "lang", "doc_id")).cast("bigint"))
         .select("pos", "vtime", "lang", "doc_id")
         .orderBy("pos")
-    }),
+    },
+      // Same WFQ virtual-time schedule, replayed with windows + QUALIFY-free
+      // nesting (the limit is a plain ORDER BY ... LIMIT in DuckDB too).
+      s"""WITH g AS MATERIALIZED (SELECT doc_id, lang,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
+        |    CAST(CASE lang WHEN 'en' THEN 5 WHEN 'es' THEN 3 WHEN 'de' THEN 3
+        |      WHEN 'fr' THEN 2 ELSE 2 END AS BIGINT) AS wt
+        |  FROM documents),
+        |s AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY u, doc_id)
+        |    AS BIGINT) AS seq FROM g),
+        |v AS (SELECT *, (seq * 1000000) // wt AS vtime FROM s),
+        |l AS (SELECT * FROM v ORDER BY vtime, lang, doc_id LIMIT 200)
+        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY vtime, lang, doc_id) AS BIGINT) AS pos,
+        |  vtime, lang, doc_id
+        |FROM l ORDER BY pos""".stripMargin),
 
     // Importance resampling by quality weight — systematic (low-variance)
     // sampling, the deterministic twin of multinomial draws: within each
@@ -295,7 +451,7 @@ object LlmPrep extends Family {
     // probability is proportional to weight with zero variance beyond
     // discretization. Per-stratum windows (no global cumsum), one lang
     // shuffle; at 100 TB K scales per stratum and the shape holds.
-    "llm_importance_resample" -> ((s, d) => {
+    Op("llm_importance_resample", (s, d) => {
       val K = 50L
       val t = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), expr(md5Bits("CAST(doc_id AS STRING)", 8)).as("u"),
@@ -314,13 +470,27 @@ object LlmPrep extends Family {
           sum(when(col("sel"), col("w")).otherwise(0L)).as("w_selected"),
           min(when(col("sel"), col("doc_id"))).as("first_sel"))
         .orderBy("lang")
-    })
-  )
-
-  /** Deterministic weighted sampling + 4-bit product-style quantization
-    * (split out of the main list only to keep it under the compiler's
-    * method-size comfort zone; merged in `queries` below). */
-  private val extraQueries: Seq[(String, Q)] = Seq(
+    },
+      // Same weights, same per-stratum cumsum, same boundary-crossing rule.
+      s"""WITH t AS MATERIALIZED (SELECT doc_id, lang,
+        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
+        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq
+        |  FROM documents),
+        |w AS (SELECT *, (uniq * 1000) // toks + 1 AS w FROM t),
+        |c AS (SELECT *, CAST(SUM(w) OVER (PARTITION BY lang ORDER BY u, doc_id
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+        |      FROM w),
+        |g AS (SELECT lang, CAST(SUM(w) AS BIGINT) AS wtot FROM w GROUP BY 1),
+        |s AS (SELECT c.*, g.wtot,
+        |    (cum * 50) // wtot > ((cum - w) * 50) // wtot AS sel
+        |  FROM c JOIN g USING (lang))
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(MAX(wtot) AS BIGINT) AS w_total,
+        |  CAST(SUM(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT) AS n_selected,
+        |  CAST(SUM(CASE WHEN sel THEN w ELSE 0 END) AS BIGINT) AS w_selected,
+        |  MIN(CASE WHEN sel THEN doc_id END) AS first_sel
+        |FROM s GROUP BY lang ORDER BY lang""".stripMargin),
     // Weighted sampling without replacement, deterministic (the mixture-
     // construction primitive next to llm_sample_stratified's equal-
     // fraction strata): priority = md5-hash(doc_id) DIV weight — a doc
@@ -330,7 +500,7 @@ object LlmPrep extends Family {
     // seedless (the llm_sample_split law). Scale: priority is computed
     // scan-side and the bottom-k is TakeOrdered (per-partition heaps +
     // one tiny merge), never a global sort.
-    "llm_sample_weighted" -> ((s, d) =>
+    Op("llm_sample_weighted", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars").cast("bigint").as("w"),
           expr(md5Bits("CAST(doc_id AS STRING)", 15))
@@ -339,7 +509,12 @@ object LlmPrep extends Family {
         .withColumn("priority", expr("h DIV w"))
         .select("doc_id", "w", "priority")
         .orderBy("priority", "doc_id")
-        .limit(50)),
+        .limit(50),
+      s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
+        |  ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 15)}
+        |    // CAST(n_chars AS BIGINT) AS priority
+        |FROM documents WHERE n_chars > 0
+        |ORDER BY priority, doc_id LIMIT 50""".stripMargin),
 
     // 4-bit scalar-grid quantization with nibble-packed codes (the PQ-
     // style compression step after llm_embed_quantize's int8: 16× memory
@@ -352,7 +527,7 @@ object LlmPrep extends Family {
     // Scale: posexplode is a projection (no shuffle); the only exchanges
     // are the 64-row stats rollup and the per-vector re-assembly, both
     // on even keys.
-    "llm_embed_pq" -> ((s, d) => {
+    Op("llm_embed_pq", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), posexplode(col("embedding")))
         .withColumn("xm", floor(col("col").cast("double") * 10000).cast("bigint"))
@@ -369,7 +544,23 @@ object LlmPrep extends Family {
             .as("code0"),
           sum("err").as("err_total"), max("err").as("err_max"))
         .orderBy("vec_id")
-    }),
+    },
+      """WITH e AS (SELECT vec_id,
+        |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS xm,
+        |    generate_subscripts(embedding, 1) - 1 AS pos
+        |  FROM embeddings),
+        |st AS (SELECT pos, MIN(xm) AS mn, MAX(xm) AS mx FROM e GROUP BY 1),
+        |c AS (SELECT vec_id, e.pos, xm, mn, mx,
+        |    CASE WHEN mx = mn THEN CAST(0 AS BIGINT)
+        |         ELSE ((xm - mn) * 15) // (mx - mn) END AS code
+        |  FROM e JOIN st ON e.pos = st.pos),
+        |r AS (SELECT *, mn + (code * (mx - mn)) // 15 AS deq FROM c)
+        |SELECT vec_id,
+        |  CAST(SUM(CASE WHEN pos < 8 THEN code * CAST(pow(16, pos) AS BIGINT)
+        |           ELSE 0 END) AS BIGINT) AS code0,
+        |  CAST(SUM(abs(xm - deq)) AS BIGINT) AS err_total,
+        |  CAST(MAX(abs(xm - deq)) AS BIGINT) AS err_max
+        |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin),
 
     // Balanced shard assignment for distributed training dataloaders:
     // docs sorted by token count DESC are dealt to K shards in SERPENTINE
@@ -380,7 +571,7 @@ object LlmPrep extends Family {
     // plus broadcast cumulative band offsets from an O(bands)-row rollup;
     // no single-task global window (the win_range_frame banding law).
     // The oracle states the SPEC with a plain global ROW_NUMBER.
-    "llm_shard_balance" -> ((s, d) => {
+    Op("llm_shard_balance", (s, d) => {
       val k = 8
       val toks = Tables.documents(s, d)
         .select(col("doc_id"),
@@ -404,7 +595,22 @@ object LlmPrep extends Family {
         .agg(count(lit(1)).as("n_docs"), sum("tokens").as("tok_total"),
           max("tokens").as("tok_max"))
         .orderBy("shard")
-    }),
+    },
+      // The SPEC form: one global ROW_NUMBER states the serpentine deal the
+      // banded Spark plan must reproduce exactly.
+      """WITH t AS (SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens
+        |  FROM documents),
+        |r AS (SELECT doc_id, tokens,
+        |    ROW_NUMBER() OVER (ORDER BY tokens DESC, doc_id) AS rank FROM t),
+        |a AS (SELECT tokens,
+        |    CASE WHEN ((rank - 1) // 8) % 2 = 0 THEN (rank - 1) % 8
+        |         ELSE 7 - (rank - 1) % 8 END AS shard
+        |  FROM r)
+        |SELECT CAST(shard AS BIGINT) AS shard, COUNT(*) AS n_docs,
+        |  CAST(SUM(tokens) AS BIGINT) AS tok_total,
+        |  CAST(MAX(tokens) AS BIGINT) AS tok_max
+        |FROM a GROUP BY shard ORDER BY shard""".stripMargin),
 
     // Preference-pair assembly (the RLHF/DPO dataset construction step):
     // within each (lang, source) "prompt group", the highest- and
@@ -413,7 +619,7 @@ object LlmPrep extends Family {
     // exact integer); both picks are ROW_NUMBER=1 under a total order, so
     // the pair set is engine-exact; degenerate groups (chosen == rejected)
     // drop. Two windows over ONE (lang, source) exchange.
-    "llm_preference_pairs" -> ((s, d) => {
+    Op("llm_preference_pairs", (s, d) => {
       val t = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("toks"),
@@ -431,7 +637,25 @@ object LlmPrep extends Family {
         .where(col("chosen_id") =!= col("rejected_id"))
         .withColumn("margin", col("chosen_score") - col("rejected_score"))
         .orderBy("lang", "source")
-    }),
+    },
+      // Same two ROW_NUMBER picks under the same total order.
+      """WITH t AS (SELECT doc_id, lang, source,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
+        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq
+        |  FROM documents),
+        |sc AS (SELECT *, (uniq * 1000) // toks AS score FROM t),
+        |b AS (SELECT lang, source, doc_id AS chosen_id, score AS chosen_score
+        |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY lang, source
+        |          ORDER BY score DESC, doc_id) AS rn FROM sc) WHERE rn = 1),
+        |w AS (SELECT lang, source, doc_id AS rejected_id, score AS rejected_score
+        |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY lang, source
+        |          ORDER BY score ASC, doc_id) AS rn FROM sc) WHERE rn = 1)
+        |SELECT b.lang, b.source, chosen_id, chosen_score,
+        |  rejected_id, rejected_score,
+        |  CAST(chosen_score - rejected_score AS BIGINT) AS margin
+        |FROM b JOIN w ON b.lang = w.lang AND b.source = w.source
+        |WHERE chosen_id <> rejected_id
+        |ORDER BY b.lang, b.source""".stripMargin),
 
     // Contrastive training-batch assembly (the CLIP-style pairing step):
     // each doc with an embedding anchors one positive (its own vector)
@@ -440,7 +664,7 @@ object LlmPrep extends Family {
     // and audit-stable (the llm_sample_split law, applied to negative
     // sampling). Pure projection + one broadcast count, no shuffle beyond
     // the anchor join.
-    "mm_contrastive_pairs" -> ((s, d) => {
+    Op("mm_contrastive_pairs", (s, d) => {
       val e = Tables.embeddings(s, d).select(col("vec_id"))
       val n = e.agg(count(lit(1)).as("n_vecs"))
       Tables.documents(s, d).select(col("doc_id"))
@@ -453,7 +677,18 @@ object LlmPrep extends Family {
         .select(col("doc_id").as("anchor"), col("vec_id").as("pos_vec"),
           col("j").as("neg_rank"), col("neg_vec"))
         .orderBy("anchor", "neg_rank")
-    }),
+    },
+      // Deterministic negative replay: same affine sample, same bump rule.
+      """WITH n AS (SELECT COUNT(*) AS n_vecs FROM embeddings),
+        |a AS (SELECT doc_id, vec_id FROM documents
+        |      JOIN embeddings ON doc_id = vec_id),
+        |x AS (SELECT doc_id, vec_id, CAST(unnest([1, 2, 3]) AS BIGINT) AS j FROM a),
+        |r AS (SELECT doc_id, vec_id, j,
+        |    (doc_id * 31 + j * 7919) % n_vecs AS raw, n_vecs
+        |  FROM x, n)
+        |SELECT doc_id AS anchor, vec_id AS pos_vec, j AS neg_rank,
+        |  CAST(CASE WHEN raw = doc_id THEN (raw + 1) % n_vecs ELSE raw END AS BIGINT) AS neg_vec
+        |FROM r ORDER BY anchor, neg_rank""".stripMargin),
 
     // Audio chunking plumbing (the STFT/feature-window pre-step of an
     // audio training pipeline): OVERLAPPING fixed windows — win 48, hop
@@ -463,7 +698,7 @@ object LlmPrep extends Family {
     // exactly as mm_frame_sample does for video). Distinct from
     // frame_sample: windows OVERLAP (hop < win), the mel/STFT layout.
     // Pure projection + generator — no shuffle.
-    "mm_audio_chunks" -> ((s, d) =>
+    Op("mm_audio_chunks", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 10 === 3)
         .select(col("doc_id"), col("text"), length(col("text")).as("len"))
         .withColumn("off", explode(sequence(lit(0), col("len") - 1, lit(16))))
@@ -471,7 +706,16 @@ object LlmPrep extends Family {
           col("off").cast("int").as("off"),
           least(lit(48), col("len") - col("off")).cast("int").as("chunk_len"),
           md5(expr("CAST(substring(text, off + 1, 48) AS BINARY)")).as("chunk_md5"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
+        |           WHERE doc_id % 10 = 3),
+        |x AS (SELECT doc_id, text, len,
+        |        CAST(unnest(generate_series(0, len - 1, 16)) AS INT) AS off
+        |      FROM d)
+        |SELECT doc_id, CAST(off // 16 AS INT) AS chunk_idx, off,
+        |  CAST(least(48, len - off) AS INT) AS chunk_len,
+        |  md5(substring(text, off + 1, 48)) AS chunk_md5
+        |FROM x ORDER BY doc_id, chunk_idx""".stripMargin),
 
     // Pad-efficiency report for length-bucketed batching — the
     // throughput decision every training run makes: batching docs of
@@ -481,7 +725,7 @@ object LlmPrep extends Family {
     // exact integers; the global max joins in as a 1-row broadcast
     // (never a driver collect). The ratio of the two waste columns IS
     // the case for bucketing.
-    "llm_pad_efficiency" -> ((s, d) => {
+    Op("llm_pad_efficiency", (s, d) => {
       val t = Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("toks"))
@@ -495,7 +739,19 @@ object LlmPrep extends Family {
           (max("toks") * count(lit(1)) - sum("toks")).as("pad_bucketed"),
           (first("gmax") * count(lit(1)) - sum("toks")).as("pad_global"))
         .orderBy("bucket")
-    }),
+    },
+      // The bucket rollup replayed; the global max is a scalar subquery.
+      """WITH t AS (SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
+        |  FROM documents),
+        |b AS (SELECT toks, toks // 32 AS bucket FROM t),
+        |g AS (SELECT MAX(toks) AS gmax FROM t)
+        |SELECT bucket, COUNT(*) AS n_docs,
+        |  CAST(SUM(toks) AS BIGINT) AS toks_sum,
+        |  CAST(MAX(toks) AS BIGINT) AS bucket_max,
+        |  CAST(MAX(toks) * COUNT(*) - SUM(toks) AS BIGINT) AS pad_bucketed,
+        |  CAST((SELECT gmax FROM g) * COUNT(*) - SUM(toks) AS BIGINT) AS pad_global
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
 
     // Audio↔video alignment — the A/V sync step of a multimodal ingest:
     // fixed-cadence video frames (32-unit stride over the doc's byte
@@ -507,7 +763,7 @@ object LlmPrep extends Family {
     // that survives a 100 TB timeline; the composed range-join+rank
     // formulation materializes every frame×earlier-chunk pair).
     // sync_lag = frame offset into its covering chunk.
-    "mm_av_sync" -> ((s, d) => {
+    Op("mm_av_sync", (s, d) => {
       val docs = Tables.documents(s, d).where(col("doc_id") % 20 === 0)
         .select(col("doc_id"), length(col("text")).cast("long").as("len"))
       val frames = docs
@@ -531,16 +787,29 @@ object LlmPrep extends Family {
           col("r_ts").as("chunk_start"),
           (col("l_ts") - col("r_ts")).as("sync_lag"))
         .orderBy("doc_id", "frame_idx")
-    }))
-
-  /** Band-bucket population cap for `mm_dedup_phash` — the dfCap law
-    * applied to perceptual-hash buckets: a band value shared by more docs
-    * than this is a degenerate key (flat-color thumbnails, boilerplate
-    * frames) and is dropped from candidate generation, keeping the
-    * candidate join sub-quadratic on any corpus. */
-  private val PhashBucketCap = 64L
-
-  private val wave6Queries: Seq[(String, Q)] = Seq(
+    },
+      // DuckDB's native ASOF JOIN replays the alignment; the windowed
+      // prefix sum rebuilds the irregular chunk starts.
+      """WITH d AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len
+        |           FROM documents WHERE doc_id % 20 = 0),
+        |fr AS (SELECT doc_id,
+        |    CAST(unnest(generate_series(0, (len + 31) // 32 - 1)) AS BIGINT) AS frame_idx
+        |  FROM d),
+        |f AS (SELECT doc_id, frame_idx, frame_idx * 32 AS ts FROM fr),
+        |ck0 AS (SELECT doc_id, len,
+        |    CAST(unnest(generate_series(0, (len + 19) // 20 - 1)) AS BIGINT) AS k
+        |  FROM d),
+        |ck1 AS (SELECT doc_id, len, k, 20 + (doc_id + k) % 13 AS clen FROM ck0),
+        |ck AS (SELECT doc_id, k,
+        |    CAST(SUM(clen) OVER (PARTITION BY doc_id ORDER BY k) - clen AS BIGINT)
+        |      AS strt, len
+        |  FROM ck1),
+        |cks AS (SELECT doc_id, k, strt FROM ck WHERE strt < len)
+        |SELECT f.doc_id, f.frame_idx, CAST(f.ts AS BIGINT) AS frame_off,
+        |  c.k AS chunk_idx, c.strt AS chunk_start,
+        |  CAST(f.ts - c.strt AS BIGINT) AS sync_lag
+        |FROM f ASOF JOIN cks c ON f.doc_id = c.doc_id AND c.strt <= f.ts
+        |ORDER BY f.doc_id, f.frame_idx""".stripMargin),
     // Perceptual-hash near-dup over the stubbed image codec (the visual
     // member of the dedup family, next to simhash's token space): each
     // doc's byte stream is resized to a fixed 31-tile grid (tile length
@@ -556,7 +825,7 @@ object LlmPrep extends Family {
     // Deterministic end to end → the oracle replays tile hashing, the
     // cap, and the verify. Scale: 32 md5s/doc scan-side, one band
     // exchange, capped buckets — the same shape as llm_dedup_simhash.
-    "mm_dedup_phash" -> ((s, d) => {
+    Op("mm_dedup_phash", (s, d) => {
       val ph = Tables.documents(s, d)
         .select(col("doc_id"), col("text"), length(col("text")).cast("bigint").as("len"))
         .where(col("len") >= 64) // thumbnails below 2 bytes/tile carry no signal
@@ -590,7 +859,29 @@ object LlmPrep extends Family {
         .where(col("hamming") <= 8)
         .distinct()
         .orderBy("a", "b")
-    }),
+    },
+      // Same 31-tile resize, 2-bit tile fingerprints, capped band buckets,
+      // and exact-hamming verify.
+      s"""WITH t AS MATERIALIZED (SELECT doc_id, text,
+        |    CAST(length(text) AS BIGINT) AS len,
+        |    (CAST(length(text) AS BIGINT) + 30) // 31 AS tl
+        |  FROM documents WHERE length(text) >= 64),
+        |b AS (SELECT doc_id,
+        |    ((${duckMd5Bits("substring(text, CAST(i * tl AS INT) + 1, CAST(tl AS INT))", 1)} & 3) << (2 * i)) AS contrib
+        |  FROM t, (SELECT unnest(range(0, 31)) AS i)),
+        |ph AS MATERIALIZED (SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS ph
+        |  FROM b GROUP BY 1),
+        |bands AS MATERIALIZED (SELECT doc_id, ph, k, (ph >> (k * 16)) & 65535 AS bv
+        |  FROM ph, (SELECT unnest(range(0, 4)) AS k)),
+        |live AS (SELECT k, bv FROM bands GROUP BY 1, 2 HAVING COUNT(*) <= 64),
+        |capped AS MATERIALIZED (SELECT bands.* FROM bands JOIN live USING (k, bv)),
+        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
+        |    x.ph AS pa, y.ph AS pb
+        |  FROM capped x JOIN capped y
+        |    ON x.k = y.k AND x.bv = y.bv AND x.doc_id < y.doc_id)
+        |SELECT a, b, CAST(bit_count(xor(pa, pb)) AS INT) AS hamming
+        |FROM cand WHERE bit_count(xor(pa, pb)) <= 8
+        |ORDER BY a, b""".stripMargin),
 
     // Whitespace tokenizer with char-offset mapping (the HF-tokenizers
     // offset_mapping contract every span-level task — NER, extractive QA,
@@ -601,7 +892,7 @@ object LlmPrep extends Family {
     // yield empty tokens with zero-width spans (both engines' split law).
     // One per-doc window (parallel across docs, series length = tokens
     // per doc); 1-in-20 doc sample bounds the emitted rows.
-    "llm_tokenize_offsets" -> ((s, d) =>
+    Op("llm_tokenize_offsets", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 20 === 2)
         .select(col("doc_id"), col("text"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
@@ -615,7 +906,23 @@ object LlmPrep extends Family {
           col("start_off"), (col("start_off") + col("tlen")).as("end_off"),
           (expr("substring(text, CAST(start_off AS INT) + 1, CAST(tlen AS INT))")
             === col("token")).as("ok"))
-        .orderBy("doc_id", "pos")),
+        .orderBy("doc_id", "pos"),
+      // Same split law, same prefix-sum offsets, same re-slice check.
+      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
+        |  FROM documents WHERE doc_id % 20 = 2),
+        |u AS (SELECT doc_id, text,
+        |    unnest(toks) AS token,
+        |    CAST(generate_subscripts(toks, 1) - 1 AS BIGINT) AS pos
+        |  FROM t),
+        |w AS (SELECT doc_id, text, pos, token,
+        |    CAST(length(token) AS BIGINT) AS tlen,
+        |    CAST(SUM(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY pos
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |      - length(token) - 1 AS BIGINT) AS start_off
+        |  FROM u)
+        |SELECT doc_id, pos, token, start_off, start_off + tlen AS end_off,
+        |  substring(text, CAST(start_off AS INT) + 1, CAST(tlen AS INT)) = token AS ok
+        |FROM w ORDER BY doc_id, pos""".stripMargin),
 
     // k-anonymity release (the governance gate beside llm_pii_redact's
     // cell-level scrub): quasi-identifier = (lang, source, length bucket);
@@ -625,7 +932,7 @@ object LlmPrep extends Family {
     // except the explicit generalized remainder. Two keyed rollups
     // (QI, then masked QI), no row leaves the cluster; at 100 TB the QI
     // cardinality, not the corpus, bounds state.
-    "llm_k_anonymity" -> ((s, d) => {
+    Op("llm_k_anonymity", (s, d) => {
       val k = 5L
       val g = Tables.documents(s, d)
         .groupBy(col("lang"), col("source"),
@@ -639,7 +946,22 @@ object LlmPrep extends Family {
         .groupBy("lang", "source", "len_bucket", "released")
         .agg(sum("n").as("n_docs"), count(lit(1)).as("n_groups"))
         .orderBy("lang", "source", "len_bucket")
-    }),
+    },
+      // Same QI rollup, same generalize-below-k re-aggregation.
+      """WITH g AS (SELECT lang, source,
+        |    CAST(n_chars AS BIGINT) // 200 AS len_bucket,
+        |    CAST(COUNT(*) AS BIGINT) AS n
+        |  FROM documents GROUP BY 1, 2, 3),
+        |m AS (SELECT
+        |    CASE WHEN n >= 5 THEN lang ELSE '*' END AS lang,
+        |    CASE WHEN n >= 5 THEN source ELSE '*' END AS source,
+        |    CASE WHEN n >= 5 THEN len_bucket ELSE -1 END AS len_bucket,
+        |    n, n >= 5 AS released
+        |  FROM g)
+        |SELECT lang, source, len_bucket, released,
+        |  CAST(SUM(n) AS BIGINT) AS n_docs, CAST(COUNT(*) AS BIGINT) AS n_groups
+        |FROM m GROUP BY 1, 2, 3, 4
+        |ORDER BY lang, source, len_bucket""".stripMargin),
 
     // N-gram novelty curve — how much of each doc is UNSEEN in all
     // earlier docs (doc_id order = ingest order): a trigram's first
@@ -649,7 +971,7 @@ object LlmPrep extends Family {
     // dedup/curation pass watches: falling novelty = the corpus is
     // repeating itself. Same shingle law as llm_dedup_minhash; docs
     // under 3 tokens have no trigrams and drop in both engines.
-    "llm_ngram_novelty" -> ((s, d) => {
+    Op("llm_ngram_novelty", (s, d) => {
       val sh = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .where(size(col("t")) > 2)
@@ -662,7 +984,21 @@ object LlmPrep extends Family {
           sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
         .withColumn("novelty_ppm", expr("(n_novel * 1000000) DIV n_shingles"))
         .orderBy("doc_id")
-    }),
+    },
+      // Same shingle law, same first-owner window, same exact ppm.
+      """WITH dd AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
+        |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
+        |       FROM dd),
+        |f AS (SELECT doc_id, s,
+        |    CAST(MIN(doc_id) OVER (PARTITION BY s) AS BIGINT) AS first_doc
+        |  FROM sh),
+        |g AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
+        |    CAST(SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
+        |  FROM f GROUP BY 1)
+        |SELECT doc_id, n_shingles, n_novel,
+        |  (n_novel * 1000000) // n_shingles AS novelty_ppm
+        |FROM g ORDER BY doc_id""".stripMargin),
 
     // Feature hashing (the sklearn HashingVectorizer / Vowpal-Wabbit
     // trick — fixed-width feature vectors with NO vocabulary state): a
@@ -674,7 +1010,7 @@ object LlmPrep extends Family {
     // rollup — stateless, which is exactly why the trick scales: no
     // vocab broadcast, no dictionary shuffle, 16→2²⁰ buckets is a
     // constant change.
-    "llm_feature_hashing" -> ((s, d) =>
+    Op("llm_feature_hashing", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .withColumn("h", expr(md5Bits("w", 8)))
@@ -682,14 +1018,17 @@ object LlmPrep extends Family {
           expr("CAST(CASE WHEN (h DIV 16) % 2 = 0 THEN 1 ELSE -1 END AS BIGINT)").as("sgn"))
         .groupBy("doc_id", "bucket")
         .agg(count(lit(1)).as("n_tokens"), sum("sgn").as("feat"))
-        .orderBy("doc_id", "bucket"))
-  )
-
-  /** Scene-cut hamming threshold (bits of the 8-bit frame fingerprint
-    * that must differ before a frame starts a new shot). */
-  private val SceneCutBits = 5
-
-  private val wave10Queries: Seq[(String, Q)] = Seq(
+        .orderBy("doc_id", "bucket"),
+      // Same bucket/sign hash law, same signed-sum features.
+      s"""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+        |h AS (SELECT doc_id,
+        |    ${duckMd5Bits("w", 8)} AS h FROM tk),
+        |f AS (SELECT doc_id, h % 16 AS bucket,
+        |    CAST(CASE WHEN (h // 16) % 2 = 0 THEN 1 ELSE -1 END AS BIGINT) AS sgn
+        |  FROM h)
+        |SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+        |  CAST(SUM(sgn) AS BIGINT) AS feat
+        |FROM f GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin),
     // Video scene-cut detection over the stubbed codec (the shot-
     // boundary stage of a video ingest — every clip pipeline segments
     // before captioning/embedding): frames are the 32-byte stride-1
@@ -700,7 +1039,7 @@ object LlmPrep extends Family {
     // to histogram/embedding deltas, on deterministic features both
     // engines share. One per-doc lag window over a projection; fan-out
     // bounded by frame count.
-    "mm_scene_cut" -> ((s, d) =>
+    Op("mm_scene_cut", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 20 === 0)
         .select(col("doc_id"), col("text"), length(col("text")).as("len"))
         .where(col("len") >= 1) // empty doc: sequence(0,-1) would descend
@@ -714,7 +1053,20 @@ object LlmPrep extends Family {
         .where(col("hd") >= SceneCutBits)
         .select(col("doc_id"), col("frame_idx").cast("bigint").as("frame_idx"),
           col("fp"), col("prev_fp"), col("hd"))
-        .orderBy("doc_id", "frame_idx")),
+        .orderBy("doc_id", "frame_idx"),
+      // Same frame geometry, same 8-bit fingerprint, same lag threshold.
+      s"""WITH d AS (SELECT doc_id, text, length(text) AS len
+        |  FROM documents WHERE doc_id % 20 = 0 AND length(text) >= 1),
+        |f AS (SELECT doc_id, i AS frame_idx,
+        |    ${duckMd5Bits("substring(text, i * 32 + 1, 32)", 2)} AS fp
+        |  FROM d, LATERAL (SELECT unnest(range(0, CAST((len + 31) // 32 AS INT))) AS i)),
+        |l AS (SELECT doc_id, frame_idx, fp,
+        |    LAG(fp) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev_fp
+        |  FROM f)
+        |SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx, fp, prev_fp,
+        |  CAST(bit_count(xor(fp, prev_fp)) AS BIGINT) AS hd
+        |FROM l WHERE bit_count(xor(fp, prev_fp)) >= 5
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // Stopword-density quality filter with a DATA-DERIVED stopword list:
     // the corpus's 5 most frequent tokens (ordered-limit with (count
@@ -723,7 +1075,7 @@ object LlmPrep extends Family {
     // them in exact ppm, and the verdict flags boilerplate (density
     // above 400‰ of tokens). Self-calibrating — no shipped wordlist to
     // drift from the corpus language mix; the 5-row list broadcasts.
-    "llm_stopword_density" -> ((s, d) => {
+    Op("llm_stopword_density", (s, d) => {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       val stop = toks.groupBy("w").agg(count(lit(1)).as("c"))
@@ -736,7 +1088,19 @@ object LlmPrep extends Family {
         .withColumn("density_ppm", expr("(n_stop * 1000000) DIV n_tokens"))
         .withColumn("boilerplate", col("density_ppm") > 400000L)
         .orderBy("doc_id")
-    }),
+    },
+      // Same top-5 derivation (count DESC, token tiebreak), same ppm law.
+      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
+        |stop AS (SELECT w AS sw FROM tk GROUP BY w
+        |  ORDER BY COUNT(*) DESC, w LIMIT 5),
+        |g AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+        |    CAST(SUM(CASE WHEN sw IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
+        |  FROM tk LEFT JOIN stop ON tk.w = stop.sw
+        |  GROUP BY 1)
+        |SELECT doc_id, n_tokens, n_stop,
+        |  (n_stop * 1000000) // n_tokens AS density_ppm,
+        |  (n_stop * 1000000) // n_tokens > 400000 AS boilerplate
+        |FROM g ORDER BY doc_id""".stripMargin),
 
     // Lexical diversity per language — type-token ratio and hapax share,
     // the corpus-health panel beside llm_corpus_stats: TTR = distinct
@@ -744,7 +1108,7 @@ object LlmPrep extends Family {
     // (high hapax + low TTR at scale = scraped boilerplate plus noise).
     // Two keyed rollups ((lang, term) then lang) — the classic two-level
     // distinct that never holds a vocabulary in memory.
-    "llm_ttr_diversity" -> ((s, d) =>
+    Op("llm_ttr_diversity", (s, d) =>
       Tables.documents(s, d)
         .select(col("lang"), explode(split(col("text"), " ")).as("w"))
         .groupBy("lang", "w").agg(count(lit(1)).as("c"))
@@ -753,7 +1117,18 @@ object LlmPrep extends Family {
           sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"))
         .withColumn("ttr_ppm", expr("(n_types * 1000000) DIV n_tokens"))
         .withColumn("hapax_ppm", expr("(n_hapax * 1000000) DIV n_types"))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      // Same two-level rollup, same ppm ratios.
+      """WITH tk AS (SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents),
+        |tc AS (SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS c FROM tk GROUP BY 1, 2),
+        |g AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS n_tokens,
+        |    CAST(COUNT(*) AS BIGINT) AS n_types,
+        |    CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax
+        |  FROM tc GROUP BY 1)
+        |SELECT lang, n_tokens, n_types, n_hapax,
+        |  (n_types * 1000000) // n_tokens AS ttr_ppm,
+        |  (n_hapax * 1000000) // n_types AS hapax_ppm
+        |FROM g ORDER BY lang""".stripMargin),
 
     // Content-defined chunking (the rsync/FastCDC law, the chunker real
     // dedup storage runs INSTEAD of llm_chunk's fixed windows): a chunk
@@ -765,7 +1140,7 @@ object LlmPrep extends Family {
     // set, chunk identity = md5 of the span. Per-position hashing is a
     // scan-side projection; the boundary frame is len/64-sized before
     // the one per-doc window.
-    "llm_cdc_chunk" -> ((s, d) => {
+    Op("llm_cdc_chunk", (s, d) => {
       val docs = Tables.documents(s, d).where(col("doc_id") % 10 === 5)
         .select(col("doc_id"), col("text"), length(col("text")).cast("bigint").as("len"))
         .where(col("len") >= 8)
@@ -789,7 +1164,26 @@ object LlmPrep extends Family {
           md5(expr("CAST(substring(text, CAST(start AS INT) + 1, CAST(b - start AS INT)) AS BINARY)"))
             .as("chunk_md5"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    },
+      // Same rolling-window boundary law, same lag-spanned chunks.
+      s"""WITH d AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len
+        |  FROM documents WHERE doc_id % 10 = 5 AND length(text) >= 8),
+        |hb AS (SELECT doc_id, CAST(i AS BIGINT) AS b
+        |  FROM d, LATERAL (SELECT unnest(range(8, CAST(len AS INT) + 1)) AS i)
+        |  WHERE ${duckMd5Bits("substring(text, CAST(i - 7 AS INT), 8)", 4)} % 64 = 0),
+        |bounds AS (SELECT DISTINCT doc_id, b FROM
+        |  (SELECT doc_id, b FROM hb UNION ALL SELECT doc_id, len FROM d)),
+        |sp AS (SELECT doc_id, b,
+        |    COALESCE(LAG(b) OVER (PARTITION BY doc_id ORDER BY b), 0) AS start
+        |  FROM bounds),
+        |ch AS (SELECT sp.doc_id, sp.b, sp.start,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY sp.doc_id ORDER BY sp.b) AS BIGINT) - 1 AS chunk_idx,
+        |    d.text
+        |  FROM sp JOIN d ON d.doc_id = sp.doc_id
+        |  WHERE sp.b > sp.start)
+        |SELECT doc_id, chunk_idx, start, b - start AS chunk_len,
+        |  md5(substring(text, CAST(start AS INT) + 1, CAST(b - start AS INT))) AS chunk_md5
+        |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin),
 
     // ANN recall@5 — the retrieval-quality audit every approximate index
     // must pass before it replaces brute force: per probe, how many of
@@ -798,10 +1192,10 @@ object LlmPrep extends Family {
     // sides are the graded operators themselves — the eval composes
     // them, so an index regression fails THIS op too. recall in exact
     // ppm; the left join keeps probes the ANN missed entirely.
-    "llm_ann_recall" -> ((s, d) => {
-      val exact = LlmOps.queries("llm_sim_topk")(s, d)
+    Op("llm_ann_recall", (s, d) => {
+      val exact = SparkEntry.queries("llm_sim_topk")(s, d)
         .select(col("probe_id"), col("neighbor_id"))
-      val ann = LlmExt.queries("llm_sim_ann")(s, d)
+      val ann = SparkEntry.queries("llm_sim_ann")(s, d)
         .select(col("probe_id"), col("neighbor_id"), lit(1L).as("hit"))
       exact.join(ann, Seq("probe_id", "neighbor_id"), "left")
         .groupBy("probe_id")
@@ -809,7 +1203,48 @@ object LlmPrep extends Family {
           sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
         .withColumn("recall_ppm", expr("(n_hit * 1000000) DIV n_exact"))
         .orderBy("probe_id")
-    }),
+    },
+      // Both graded pipelines replayed (llm_sim_topk's exact scan and
+      // llm_sim_ann's IVF search), then the same left-join recall rollup.
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+        |p AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
+        |exact AS (SELECT probe_id, neighbor_id FROM (
+        |  SELECT probe_id, vec_id AS neighbor_id,
+        |    ROW_NUMBER() OVER (PARTITION BY probe_id
+        |      ORDER BY ROUND(list_cosine_similarity(p_emb, emb), 4) DESC, vec_id) AS rnk
+        |  FROM p, e WHERE vec_id <> probe_id)
+        |  WHERE rnk <= 5),
+        |st AS (SELECT COUNT(*) AS n_tot FROM e),
+        |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
+        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
+        |               < 4294967296.0 / sqrt(n_tot * 1.0)),
+        |assigned AS (
+        |  SELECT vec_id, emb, cluster FROM (
+        |    SELECT e.vec_id, e.emb, c.cid AS cluster,
+        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+        |        ORDER BY ROUND(list_cosine_similarity(e.emb, c.cemb), 4) DESC, c.cid) AS crn
+        |    FROM e CROSS JOIN cent c)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT probe_id, p_emb, cluster FROM (
+        |    SELECT p.probe_id, p.p_emb, c.cid AS cluster,
+        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
+        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, c.cemb), 4) DESC, c.cid) AS prn
+        |    FROM p CROSS JOIN cent c)
+        |  WHERE prn <= 4),
+        |ann AS (SELECT probe_id, neighbor_id, 1 AS hit FROM (
+        |  SELECT pr.probe_id, a.vec_id AS neighbor_id,
+        |    ROW_NUMBER() OVER (PARTITION BY pr.probe_id
+        |      ORDER BY ROUND(list_cosine_similarity(pr.p_emb, a.emb), 4) DESC, a.vec_id) AS rnk
+        |  FROM probes pr JOIN assigned a ON pr.cluster = a.cluster
+        |  WHERE a.vec_id <> pr.probe_id)
+        |  WHERE rnk <= 5)
+        |SELECT exact.probe_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
+        |  CAST(SUM(COALESCE(hit, 0)) AS BIGINT) AS n_hit,
+        |  (CAST(SUM(COALESCE(hit, 0)) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT) AS recall_ppm
+        |FROM exact LEFT JOIN ann
+        |  ON ann.probe_id = exact.probe_id AND ann.neighbor_id = exact.neighbor_id
+        |GROUP BY exact.probe_id ORDER BY 1""".stripMargin),
 
     // Greenlist watermark DETECTOR (the Kirchenbauer et al. scheme a
     // provenance pipeline runs over incoming text): a bigram is "green"
@@ -819,7 +1254,7 @@ object LlmPrep extends Family {
     // (4g−n)/√(3n) via IEEE sqrt, and the VERDICT on pure integers —
     // z > 2 ⟺ 4g−n > 0 ∧ (4g−n)² > 12n — so the flag can never split
     // on a ulp. Scan-side bigram hashing + one doc rollup.
-    "llm_watermark_detect" -> ((s, d) => {
+    Op("llm_watermark_detect", (s, d) => {
       val bg = Tables.documents(s, d)
         .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
         .withColumn("prev", lag("w", 1).over(
@@ -835,7 +1270,25 @@ object LlmPrep extends Family {
         .withColumn("watermarked", expr(
           "4 * n_green - n_bigrams > 0 AND (4 * n_green - n_bigrams) * (4 * n_green - n_bigrams) > 12 * n_bigrams"))
         .orderBy("doc_id")
-    }),
+    },
+      // Same bigram hash, same sqrt z, same integer verdict.
+      s"""WITH tk AS (SELECT doc_id, w, pos FROM (
+        |    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
+        |      generate_subscripts(string_split(text, ' '), 1) AS pos
+        |    FROM documents)),
+        |bg AS (SELECT doc_id, w,
+        |    LAG(w) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
+        |  FROM tk),
+        |g AS (SELECT doc_id,
+        |    CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+        |    CAST(SUM(CASE WHEN ${duckMd5Bits("prev || '|' || w", 8)} % 4 = 0
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_green
+        |  FROM bg WHERE prev IS NOT NULL GROUP BY 1)
+        |SELECT doc_id, n_bigrams, n_green,
+        |  CAST(4 * n_green - n_bigrams AS DOUBLE) / sqrt(CAST(3 * n_bigrams AS DOUBLE)) AS z,
+        |  4 * n_green - n_bigrams > 0
+        |    AND (4 * n_green - n_bigrams) * (4 * n_green - n_bigrams) > 12 * n_bigrams AS watermarked
+        |FROM g ORDER BY doc_id""".stripMargin),
 
     // T5-style span corruption plan (the denoising-objective prep step):
     // whole 3-token blocks mask wherever hash(doc, block) ≡ 0 (mod 8) —
@@ -845,7 +1298,7 @@ object LlmPrep extends Family {
     // visible ppm) plus the md5 of the 0/1 flag string — the full mask
     // pinned in one hash without shipping it. All HOF scan-side work,
     // one projection, no shuffle beyond the final sort.
-    "llm_span_corruption" -> ((s, d) =>
+    Op("llm_span_corruption", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 10 === 7)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .withColumn("n", size(col("t")).cast("bigint"))
@@ -860,7 +1313,24 @@ object LlmPrep extends Family {
         .select(col("doc_id"), col("n").as("n_tokens"), col("n_masked"), col("n_spans"),
           expr("((n - n_masked) * 1000000) DIV n").as("visible_ppm"),
           md5(expr("CAST(array_join(flags, '') AS BINARY)")).as("mask_md5"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // Same block-hash mask law, same flag-string fingerprint.
+      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
+        |  FROM documents WHERE doc_id % 10 = 7),
+        |f AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n,
+        |    list_transform(range(0, len(t)), i ->
+        |      CASE WHEN ${duckMd5Bits("CAST(doc_id AS VARCHAR) || ':' || CAST(i // 3 AS VARCHAR)", 8)} % 8 = 0
+        |      THEN '1' ELSE '0' END) AS flags
+        |  FROM d),
+        |m AS (SELECT doc_id, n, flags,
+        |    CAST(len(list_filter(flags, f -> f = '1')) AS BIGINT) AS n_masked,
+        |    CAST(len(list_filter(range(0, CAST((n + 2) // 3 AS INT)), j ->
+        |      ${duckMd5Bits("CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)} % 8 = 0)) AS BIGINT) AS n_spans
+        |  FROM f)
+        |SELECT doc_id, n AS n_tokens, n_masked, n_spans,
+        |  ((n - n_masked) * 1000000) // n AS visible_ppm,
+        |  md5(array_to_string(flags, '')) AS mask_md5
+        |FROM m ORDER BY doc_id""".stripMargin),
 
     // Temperature-scaled language mixture (the multilingual re-balancing
     // law from the mBERT/XLM-R line: sample language ℓ ∝ n_ℓ^(1/T), so
@@ -869,7 +1339,7 @@ object LlmPrep extends Family {
     // correction against k², so a float sqrt boundary can never leak
     // into the hash) — and every share is one cross-multiplied ppm DIV.
     // One per-language rollup + a broadcast total.
-    "llm_mixture_temperature" -> ((s, d) => {
+    Op("llm_mixture_temperature", (s, d) => {
       val isqrt = "CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS BIGINT)"
       val t = Tables.documents(s, d)
         .groupBy("lang")
@@ -885,7 +1355,22 @@ object LlmPrep extends Family {
           expr("(n_tokens * 1000000) DIV tok_total").as("natural_ppm"),
           expr("(w * 1000000) DIV w_total").as("sampled_ppm"))
         .orderBy("lang")
-    }),
+    },
+      // Same exact integer sqrt (±1-corrected), same ppm shares.
+      """WITH g AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+        |  FROM documents GROUP BY 1),
+        |k AS (SELECT *, CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS BIGINT) AS k0 FROM g),
+        |w AS (SELECT lang, n_docs, n_tokens,
+        |    CAST(CASE WHEN (k0 + 1) * (k0 + 1) <= n_tokens THEN k0 + 1
+        |         WHEN k0 * k0 > n_tokens THEN k0 - 1 ELSE k0 END AS BIGINT) AS w
+        |  FROM k),
+        |t AS (SELECT CAST(SUM(w) AS BIGINT) AS w_total,
+        |    CAST(SUM(n_tokens) AS BIGINT) AS tok_total FROM w)
+        |SELECT lang, n_docs, n_tokens, w,
+        |  (n_tokens * 1000000) // tok_total AS natural_ppm,
+        |  (w * 1000000) // w_total AS sampled_ppm
+        |FROM w, t ORDER BY lang""".stripMargin),
 
     // Sliding-window chunking with overlap — the RAG-ingest default
     // (llm_chunk is gap-free fixed windows, llm_cdc_chunk is
@@ -894,7 +1379,7 @@ object LlmPrep extends Family {
     // window clamped to the tail, chunk identity = md5 of the joined
     // token slice. Pure HOF slice per chunk — scan-side explode, no
     // shuffle beyond the sort.
-    "llm_chunk_overlap" -> ((s, d) =>
+    Op("llm_chunk_overlap", (s, d) =>
       Tables.documents(s, d).where(col("doc_id") % 10 === 1)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .withColumn("n", size(col("t")).cast("bigint"))
@@ -908,7 +1393,20 @@ object LlmPrep extends Family {
           md5(expr(
             "CAST(array_join(slice(t, CAST(start_tok AS INT) + 1, CAST(chunk_toks AS INT)), ' ') AS BINARY)"))
             .as("chunk_md5"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      // Same stride-48 window law, same clamped tail, same slice hash.
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+        |  FROM documents WHERE doc_id % 10 = 1),
+        |c AS (SELECT doc_id, t, n, CAST(i AS BIGINT) AS chunk_idx,
+        |    CAST(i AS BIGINT) * 48 AS start_tok
+        |  FROM d, LATERAL (SELECT unnest(range(0,
+        |    CAST(GREATEST((n - 17) // 48, 0) AS INT) + 1)) AS i))
+        |SELECT doc_id, chunk_idx, start_tok,
+        |  LEAST(64, n - start_tok) AS chunk_toks,
+        |  md5(array_to_string(array_slice(t, CAST(start_tok AS INT) + 1,
+        |    CAST(start_tok + LEAST(64, n - start_tok) AS INT)), ' ')) AS chunk_md5
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
 
     // Cross-language vocabulary overlap — how much surface form do two
     // languages share (loanwords, numerals, markup — the signal that
@@ -916,7 +1414,7 @@ object LlmPrep extends Family {
     // vocabularies from one (lang, token) rollup, pairwise intersection
     // from ONE self-join on the token (a<b canonical), Jaccard in exact
     // ppm. The token join is keyed — never a vocab×vocab product.
-    "llm_vocab_overlap" -> ((s, d) => {
+    Op("llm_vocab_overlap", (s, d) => {
       val v = Tables.documents(s, d)
         .select(col("lang"), explode(split(col("text"), " ")).as("w"))
         .distinct()
@@ -932,7 +1430,20 @@ object LlmPrep extends Family {
         .select(col("lang_a"), col("lang_b"), col("n_a"), col("n_b"), col("n_shared"),
           expr("(n_shared * 1000000) DIV (n_a + n_b - n_shared)").as("jaccard_ppm"))
         .orderBy("lang_a", "lang_b")
-    }),
+    },
+      // Same distinct vocabularies, same canonical pair join, same ppm.
+      """WITH v AS MATERIALIZED (SELECT DISTINCT lang, w FROM (
+        |    SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents)),
+        |sz AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM v GROUP BY 1),
+        |i AS (SELECT x.lang AS lang_a, y.lang AS lang_b,
+        |    CAST(COUNT(*) AS BIGINT) AS n_shared
+        |  FROM v x JOIN v y ON x.w = y.w AND x.lang < y.lang
+        |  GROUP BY 1, 2)
+        |SELECT lang_a, lang_b, sa.n AS n_a, sb.n AS n_b, n_shared,
+        |  (n_shared * 1000000) // (sa.n + sb.n - n_shared) AS jaccard_ppm
+        |FROM i JOIN sz sa ON sa.lang = i.lang_a
+        |JOIN sz sb ON sb.lang = i.lang_b
+        |ORDER BY lang_a, lang_b""".stripMargin),
 
     // Hard-negative mining (the contrastive-training stage between
     // random negatives and near-duplicates): per anchor the top-3
@@ -942,7 +1453,7 @@ object LlmPrep extends Family {
     // Reuses the native CosineSimilarity expression on rounded sims
     // (engine-identical ordering); one broadcast probe join + a per-
     // anchor ordered-limit.
-    "llm_hard_negatives" -> ((s, d) => {
+    Op("llm_hard_negatives", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val p = e.where(col("vec_id") < 10)
@@ -955,7 +1466,20 @@ object LlmPrep extends Family {
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 3)
         .orderBy("anchor_id", "rnk")
-    }),
+    },
+      // Same rounded-cosine band, same ordered-limit per anchor.
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+        |p AS (SELECT vec_id AS anchor_id, emb AS a_emb FROM e WHERE vec_id < 10),
+        |sim AS (SELECT anchor_id, vec_id AS negative_id,
+        |    ROUND(list_cosine_similarity(a_emb, emb), 4) AS sim
+        |  FROM p, e WHERE vec_id <> anchor_id),
+        |b AS (SELECT * FROM sim WHERE sim >= 0.05 AND sim < 0.5),
+        |r AS (SELECT anchor_id, negative_id, sim,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY anchor_id
+        |      ORDER BY sim DESC, negative_id) AS INT) AS rnk
+        |  FROM b)
+        |SELECT anchor_id, negative_id, sim, rnk FROM r WHERE rnk <= 3
+        |ORDER BY anchor_id, rnk""".stripMargin),
 
     // Curation filter funnel — the attrition report every data pipeline
     // publishes beside its output (which stage costs how much corpus?):
@@ -965,7 +1489,7 @@ object LlmPrep extends Family {
     // prefixes — no stage re-scans, stage order explicit. One window
     // (exact-dup rank per text) + one scalar rollup, unpivoted to the
     // per-stage report.
-    "llm_filter_funnel" -> ((s, d) => {
+    Op("llm_filter_funnel", (s, d) => {
       val flagged = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"),
           col("n_chars").cast("bigint").as("len"),
@@ -991,7 +1515,36 @@ object LlmPrep extends Family {
             |  4L, 'exact_dedup', n3, n4) AS (stage, gate, n_in, n_out)""".stripMargin))
         .withColumn("drop_ppm", expr("((n_in - n_out) * 1000000) DIV n_in"))
         .orderBy("stage")
-    }),
+    },
+      // Same chained gates, same one-pass flags, same funnel unpivot.
+      """WITH f AS (SELECT doc_id, lang, text,
+        |    CAST(n_chars AS BIGINT) AS len,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
+        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq,
+        |    ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) = 1 AS first_of_text
+        |  FROM documents),
+        |g AS (SELECT *,
+        |    len >= 64 AS g1,
+        |    len >= 64 AND lang IN ('en', 'de', 'fr', 'es', 'ja') AS g2,
+        |    len >= 64 AND lang IN ('en', 'de', 'fr', 'es', 'ja')
+        |      AND (uniq * 1000) // toks >= 300 AS g3,
+        |    len >= 64 AND lang IN ('en', 'de', 'fr', 'es', 'ja')
+        |      AND (uniq * 1000) // toks >= 300 AND first_of_text AS g4
+        |  FROM f),
+        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
+        |    CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(SUM(CASE WHEN g2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+        |    CAST(SUM(CASE WHEN g3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
+        |    CAST(SUM(CASE WHEN g4 THEN 1 ELSE 0 END) AS BIGINT) AS n4
+        |  FROM g),
+        |u AS (
+        |  SELECT 1 AS stage, 'min_length' AS gate, n0 AS n_in, n1 AS n_out FROM a
+        |  UNION ALL SELECT 2, 'known_lang', n1, n2 FROM a
+        |  UNION ALL SELECT 3, 'diversity', n2, n3 FROM a
+        |  UNION ALL SELECT 4, 'exact_dedup', n3, n4 FROM a)
+        |SELECT CAST(stage AS BIGINT) AS stage, gate, n_in, n_out,
+        |  ((n_in - n_out) * 1000000) // n_in AS drop_ppm
+        |FROM u ORDER BY stage""".stripMargin),
 
     // Zipf's-law audit — the corpus-linguistics sanity check (natural
     // text has rank·frequency ≈ constant; synthetic or templated text
@@ -999,7 +1552,7 @@ object LlmPrep extends Family {
     // (TakeOrderedAndProject, never a full vocab sort), the Zipf
     // invariant rank·freq, and its level relative to the rank-1 token
     // in exact ppm. One vocab rollup + a 30-row window.
-    "llm_zipf_check" -> ((s, d) => {
+    Op("llm_zipf_check", (s, d) => {
       val top = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("freq"))
@@ -1012,7 +1565,18 @@ object LlmPrep extends Family {
           (col("rank") * col("freq")).as("zipf_product"),
           expr("(rank * freq * 1000000) DIV f1").as("rel_ppm"))
         .orderBy("rank")
-    }),
+    },
+      // Same top-30 cut, same rank·freq invariant, same ppm scaling.
+      """WITH tk AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+        |v AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM tk GROUP BY 1
+        |  ORDER BY freq DESC, w LIMIT 30),
+        |r AS (SELECT w, freq,
+        |    CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, w) AS BIGINT) AS rank
+        |  FROM v),
+        |m AS (SELECT CAST(MAX(freq) AS BIGINT) AS f1 FROM v)
+        |SELECT rank, w AS token, freq, CAST(rank * freq AS BIGINT) AS zipf_product,
+        |  (rank * freq * 1000000) // f1 AS rel_ppm
+        |FROM r, m ORDER BY rank""".stripMargin),
 
     // Embedding norm audit — the encoder-health check an embedding
     // pipeline runs before indexing (near-zero norms = dead encoder
@@ -1021,7 +1585,7 @@ object LlmPrep extends Family {
     // the array (both engines fold in element order, so the IEEE sum is
     // bit-identical), floored to exact micro; vectors band into $2-wide
     // buckets with a degenerate flag. One projection + one band rollup.
-    "mm_embedding_norm_audit" -> ((s, d) =>
+    Op("mm_embedding_norm_audit", (s, d) =>
       Tables.embeddings(s, d)
         .select(col("vec_id"),
           expr("""CAST(floor(aggregate(CAST(embedding AS ARRAY<DOUBLE>),
@@ -1032,12 +1596,22 @@ object LlmPrep extends Family {
         .agg(count(lit(1)).as("n_vectors"),
           min("l2sq_micro").as("min_l2sq"), max("l2sq_micro").as("max_l2sq"),
           sum(when(col("l2sq_micro") < 100000L, 1L).otherwise(0L)).as("n_near_zero"))
-        .orderBy("band"))
-  )
+        .orderBy("band"),
+      // Same ordered fold, same micro floor, same bands.
+      """WITH n AS (SELECT vec_id,
+        |    CAST(floor(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+        |      list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)),
+        |      (acc, x) -> acc + x) * 1000000) AS BIGINT) AS l2sq_micro
+        |  FROM embeddings),
+        |b AS (SELECT *, l2sq_micro // 2000000 AS band FROM n)
+        |SELECT band, CAST(COUNT(*) AS BIGINT) AS n_vectors,
+        |  CAST(MIN(l2sq_micro) AS BIGINT) AS min_l2sq,
+        |  CAST(MAX(l2sq_micro) AS BIGINT) AS max_l2sq,
+        |  CAST(SUM(CASE WHEN l2sq_micro < 100000 THEN 1 ELSE 0 END) AS BIGINT) AS n_near_zero
+        |FROM b GROUP BY 1 ORDER BY band""".stripMargin),
+    // Round-10 wave: the distributed-dataloader contract + the packed-
+    // attention accounting that justifies llm_pack_sequences downstream.
 
-  /** Round-10 wave: the distributed-dataloader contract + the packed-
-    * attention accounting that justifies llm_pack_sequences downstream. */
-  private val wave11Queries: Seq[(String, Q)] = Seq(
     // EXIF privacy audit — the metadata-governance step of image ingest
     // (mm_decode_meta reads structural fields; this audits the PRIVACY
     // ones a release pipeline must strip): deterministic md5-derived
@@ -1045,7 +1619,7 @@ object LlmPrep extends Family {
     // timestamp-present 2-in-3), per-source ledger of exposure counts,
     // GPS rate in exact ppm, and the must_strip verdict any nonzero GPS
     // count flips. One scan, one rollup.
-    "mm_exif_audit" -> ((s, d) => {
+    Op("mm_exif_audit", (s, d) => {
       Tables.documents(s, d).where(col("doc_id") % 40 === 0)
         .select(col("doc_id"), col("source"))
         .withColumn("orientation", expr(s"1 + ${md5Bits("eo", "doc_id", 8)} % 8"))
@@ -1059,7 +1633,21 @@ object LlmPrep extends Family {
         .withColumn("gps_ppm", expr("n_gps * 1000000 DIV n_images"))
         .withColumn("must_strip", col("n_gps") > 0)
         .orderBy("source")
-    }),
+    },
+      // Same md5 facets, same exposure ledger.
+      s"""WITH i AS (SELECT doc_id, source,
+        |    1 + ${duckMd5Bits("eo", "doc_id", 8)} % 8 AS orientation,
+        |    ${duckMd5Bits("eg", "doc_id", 8)} % 5 = 0 AS has_gps,
+        |    ${duckMd5Bits("et", "doc_id", 8)} % 3 < 2 AS has_ts
+        |  FROM documents WHERE doc_id % 40 = 0),
+        |g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_images,
+        |    CAST(SUM(CASE WHEN has_gps THEN 1 ELSE 0 END) AS BIGINT) AS n_gps,
+        |    CAST(SUM(CASE WHEN has_ts THEN 1 ELSE 0 END) AS BIGINT) AS n_ts,
+        |    CAST(SUM(CASE WHEN orientation > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rotated
+        |  FROM i GROUP BY 1)
+        |SELECT source, n_images, n_gps, n_ts, n_rotated,
+        |  n_gps * 1000000 // n_images AS gps_ppm, n_gps > 0 AS must_strip
+        |FROM g ORDER BY source""".stripMargin),
     // Distributed dataloader epoch plan (the PyTorch DistributedSampler
     // contract a training job keys on): per epoch the corpus is shuffled
     // by the deterministic md5(epoch:doc) order, round-robin sharded over
@@ -1071,7 +1659,7 @@ object LlmPrep extends Family {
     // assignments. One global ROW_NUMBER per epoch (the 100 TB shape
     // shards the sort by hash prefix exactly like llm_sample_split); all
     // arithmetic integer.
-    "llm_dataloader_epoch_plan" -> ((s, d) => {
+    Op("llm_dataloader_epoch_plan", (s, d) => {
       val W = 4; val B = 8
       val epochs = Seq(0, 1).map { ep =>
         // the epoch-shuffle position is the two-level banded row_number
@@ -1107,7 +1695,24 @@ object LlmPrep extends Family {
       epochs.reduce(_ unionByName _)
         .select("epoch", "rank", "n_samples", "n_batches", "n_dropped", "used_checksum")
         .orderBy("epoch", "rank")
-    }),
+    },
+      // Same md5(epoch:doc) shuffle order, same round-robin mod-4 sharding,
+      // same whole-batch trim — integer end to end.
+      s"""WITH e AS (SELECT 0 AS epoch UNION ALL SELECT 1),
+        |s AS (SELECT epoch, doc_id,
+        |    ${duckMd5Bits("CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 8)} AS u
+        |  FROM documents, e),
+        |p AS (SELECT epoch, doc_id,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY epoch ORDER BY u, doc_id) AS BIGINT) - 1 AS pos
+        |  FROM s),
+        |r AS (SELECT epoch, doc_id, pos % 4 AS rnk, pos // 4 AS rank_pos FROM p),
+        |g AS (SELECT *, COUNT(*) OVER (PARTITION BY epoch, rnk) AS n_rank FROM r)
+        |SELECT CAST(epoch AS BIGINT) AS epoch, rnk AS rank,
+        |  CAST(COUNT(*) AS BIGINT) AS n_samples,
+        |  CAST(COUNT(*) // 8 AS BIGINT) AS n_batches,
+        |  CAST(SUM(CASE WHEN rank_pos < (n_rank // 8) * 8 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
+        |  CAST(SUM(CASE WHEN rank_pos < (n_rank // 8) * 8 THEN doc_id ELSE 0 END) AS BIGINT) AS used_checksum
+        |FROM g GROUP BY epoch, rnk ORDER BY epoch, rank""".stripMargin),
 
     // Packed-attention savings report — the accounting that justifies
     // sequence packing to the training stack: packing only pays if the
@@ -1116,7 +1721,7 @@ object LlmPrep extends Family {
     // the savings ppm is the graded headline. Reuses the exact
     // llm_pack_sequences assignment (same buckets, same prefix sums) so
     // the two reports can never drift apart.
-    "llm_attention_block_savings" -> ((s, d) => {
+    Op("llm_attention_block_savings", (s, d) => {
       val tok = Tables.documents(s, d)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("n_tok"),
@@ -1136,7 +1741,27 @@ object LlmPrep extends Family {
           expr("((full_cells - blocked_cells) * 1000000) DIV full_cells"))
         .select("pack_id", "n_docs", "n_tokens", "blocked_cells", "full_cells", "savings_ppm")
         .orderBy("pack_id")
-    }),
+    },
+      // Same bucketed prefix-sum pack assignment as llm_pack_sequences;
+      // cells in exact BIGINT (max (Σtok)²·10⁶ ≈ 10¹² — no overflow).
+      s"""WITH t AS (SELECT doc_id,
+         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
+         |  FROM documents),
+         |b AS (SELECT *, u % 32 AS bucket FROM t),
+         |c AS (SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY bucket ORDER BY u, doc_id
+         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |      FROM b),
+         |p AS (SELECT *, bucket * $ShardIdSpan + (cum - n_tok) // $Ctx AS pack_id FROM c),
+         |g AS (SELECT pack_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |    CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+         |    CAST(SUM(n_tok * n_tok) AS BIGINT) AS blocked_cells
+         |  FROM p GROUP BY pack_id)
+         |SELECT pack_id, n_docs, n_tokens, blocked_cells,
+         |  n_tokens * n_tokens AS full_cells,
+         |  ((n_tokens * n_tokens - blocked_cells) * 1000000) // (n_tokens * n_tokens)
+         |    AS savings_ppm
+         |FROM g ORDER BY pack_id""".stripMargin),
 
     // Tokenizer fertility per language — THE tokenizer-evaluation metric
     // (bytes/token and chars/token): a language whose fertility runs high
@@ -1146,7 +1771,7 @@ object LlmPrep extends Family {
     // ratios — that would weight short docs up), in exact milli; bytes
     // via octet_length (UTF-8 octets) vs chars via char length, all
     // non-negative so DIV == floor. One groupBy shuffle on |langs| keys.
-    "llm_tokenizer_fertility" -> ((s, d) =>
+    Op("llm_tokenizer_fertility", (s, d) =>
       Tables.documents(s, d)
         .select(col("lang"),
           octet_length(col("text")).cast("bigint").as("bytes"),
@@ -1159,7 +1784,23 @@ object LlmPrep extends Family {
           expr("(sum_bytes * 1000) DIV sum_tokens"))
         .withColumn("chars_per_token_milli",
           expr("(sum_chars * 1000) DIV sum_tokens"))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      // strlen = UTF-8 bytes, length = chars in DuckDB — the same
+      // byte/char split as Spark's octet_length/length.
+      """WITH t AS (SELECT lang,
+        |    CAST(strlen(text) AS BIGINT) AS bytes,
+        |    CAST(length(text) AS BIGINT) AS chars,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
+        |  FROM documents),
+        |g AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |    CAST(SUM(bytes) AS BIGINT) AS sum_bytes,
+        |    CAST(SUM(chars) AS BIGINT) AS sum_chars,
+        |    CAST(SUM(toks) AS BIGINT) AS sum_tokens
+        |  FROM t GROUP BY lang)
+        |SELECT lang, n_docs, sum_bytes, sum_chars, sum_tokens,
+        |  (sum_bytes * 1000) // sum_tokens AS bytes_per_token_milli,
+        |  (sum_chars * 1000) // sum_tokens AS chars_per_token_milli
+        |FROM g ORDER BY lang""".stripMargin),
 
     // SFT chat-template rendering — the assembly step between raw
     // (prompt, response) pairs and llm_loss_masking's token spans: each
@@ -1169,7 +1810,7 @@ object LlmPrep extends Family {
     // an md5 fingerprint of the rendered string, so any template drift
     // (delimiter, ordering, whitespace) breaks the hash. Pure per-row
     // projection — embarrassingly parallel at any scale.
-    "llm_sft_chat_template" -> ((s, d) => {
+    Op("llm_sft_chat_template", (s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       docs.as("p").where(col("doc_id") % 10 === 4)
         .join(docs.as("r"), col("r.doc_id") === col("p.doc_id") + 1)
@@ -1186,7 +1827,22 @@ object LlmPrep extends Family {
           expr("(asst_len * 1000000) DIV length(rendered)").as("mask_ppm"),
           md5(col("rendered")).as("render_md5"))
         .orderBy("pair_id")
-    }),
+    },
+      // Same template literals, same span arithmetic, same md5.
+      """WITH pr AS (SELECT p.doc_id AS pair_id,
+        |    '<|system|>You are a helpful assistant.
+        |<|user|>' || p.text || '
+        |<|assistant|>' || r.text || '<|end|>' AS rendered,
+        |    CAST(length(r.text) AS BIGINT) AS asst_len
+        |  FROM documents p JOIN documents r ON r.doc_id = p.doc_id + 1
+        |  WHERE p.doc_id % 10 = 4)
+        |SELECT pair_id,
+        |  CAST(length(rendered) AS BIGINT) AS total_len,
+        |  CAST(length(rendered) AS BIGINT) - asst_len - 7 AS asst_off,
+        |  asst_len,
+        |  (asst_len * 1000000) // CAST(length(rendered) AS BIGINT) AS mask_ppm,
+        |  md5(rendered) AS render_md5
+        |FROM pr ORDER BY pair_id""".stripMargin),
 
     // Expected-calibration-error table — the reliability diagram that
     // audits llm_quality_classifier-style scores before they gate data:
@@ -1197,7 +1853,7 @@ object LlmPrep extends Family {
     // construction, so the audited gaps are pure sampling noise); all
     // milli-unit integer arithmetic, |conf−acc| needs no division. One
     // 10-key groupBy.
-    "llm_calibration_error" -> ((s, d) =>
+    Op("llm_calibration_error", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           expr(s"${md5Bits("c", "doc_id", 8)} % 1000")
@@ -1213,7 +1869,22 @@ object LlmPrep extends Family {
         .withColumn("acc_milli", expr("(n_pos * 1000) DIV n"))
         .withColumn("gap_milli", abs(col("conf_milli") - col("acc_milli")))
         .select("bucket", "n", "conf_milli", "acc_milli", "gap_milli")
-        .orderBy("bucket")),
+        .orderBy("bucket"),
+      // Same two independent md5 draws, same decile buckets, same integer
+      // milli gaps.
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("c", "doc_id", 8)} % 1000 AS conf,
+        |    ${duckMd5Bits("y", "doc_id", 8)} % 1000 AS draw
+        |  FROM documents),
+        |b AS (SELECT conf // 100 AS bucket, conf, draw < conf AS y FROM t),
+        |g AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(SUM(conf) AS BIGINT) AS sum_conf,
+        |    CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
+        |  FROM b GROUP BY bucket)
+        |SELECT bucket, n, sum_conf // n AS conf_milli,
+        |  (n_pos * 1000) // n AS acc_milli,
+        |  abs(sum_conf // n - (n_pos * 1000) // n) AS gap_milli
+        |FROM g ORDER BY bucket""".stripMargin),
 
     // Modality sniffing by MAGIC BYTES — the decode-free router at the
     // front of a multimodal ingest (files lie about extensions; headers
@@ -1222,7 +1893,7 @@ object LlmPrep extends Family {
     // no codec, no full read at the logical level), and the rollup
     // counts bytes per detected modality. Oracle replays the generator
     // rule (doc_id mod 3 picks the header) arithmetically.
-    "mm_magic_sniff" -> ((s, d) => {
+    Op("mm_magic_sniff", (s, d) => {
       val dir = Scratch.staged("magicsniff", d) { dir =>
         val png = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
         val jpg = Array(0xFF, 0xD8, 0xFF).map(_.toByte)
@@ -1249,7 +1920,18 @@ object LlmPrep extends Family {
         .groupBy("modality")
         .agg(count(lit(1)).as("n_files"), sum("length").as("sum_bytes"))
         .orderBy("modality")
-    }),
+    },
+      // The generator rule replayed arithmetically: header length by
+      // doc_id/40 mod 3 (png 8, jpeg 3, wav 12), bytes = strlen + header.
+      """WITH b AS (SELECT doc_id, (doc_id // 40) % 3 AS kind,
+        |    CAST(strlen(text) AS BIGINT) AS body
+        |  FROM documents WHERE doc_id % 40 = 0)
+        |SELECT CASE kind WHEN 0 THEN 'image_png' WHEN 1 THEN 'image_jpeg'
+        |    ELSE 'audio_wav' END AS modality,
+        |  CAST(COUNT(*) AS BIGINT) AS n_files,
+        |  CAST(SUM(body + CASE kind WHEN 0 THEN 8 WHEN 1 THEN 3 ELSE 12 END) AS BIGINT)
+        |    AS sum_bytes
+        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // IVF + PQ composed — the PRODUCTION ANN shape (FAISS's IVF-PQ):
     // coarse hash-sampled centroids prune the corpus to nprobe=2 cells,
@@ -1259,7 +1941,7 @@ object LlmPrep extends Family {
     // stage is exact integer arithmetic (micro-scaled dims, per-dim
     // min/max PQ grid, BIGINT dots), so the full pipeline replays in
     // SQL. Top-3 by (approx dot, id) total order per probe.
-    "llm_ann_ivf_pq" -> ((s, d) => {
+    Op("llm_ann_ivf_pq", (s, d) => {
       // Round-17 rewrite to the array + codegen'd-dot shape proven on
       // llm_ann_index_maintain (guide §1.2 "per-task work" + §2.3 "shuffle
       // fewer bytes"): the old posexplode formulation joined the 64-dim
@@ -1332,926 +2014,9 @@ object LlmPrep extends Family {
         .withColumn("rnk", row_number().over(wTop).cast("bigint"))
         .where(col("rnk") <= 3)
         .orderBy("probe_id", "rnk")
-    }),
-
-    // Length-bias audit over the preference pairs — RLHF's best-known
-    // failure mode (reward models prefer LONGER answers regardless of
-    // quality; a pair set where chosen systematically out-lengths
-    // rejected will train verbosity, not helpfulness): rebuilds the
-    // exact llm_preference_pairs selection, compares token lengths
-    // side-by-side, and grades the share of chosen-longer pairs in
-    // exact ppm with a both-tails verdict band [40%, 60%].
-    "llm_length_bias_audit" -> ((s, d) => {
-      val t = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"),
-          size(split(col("text"), " ")).cast("bigint").as("toks"),
-          size(array_distinct(split(col("text"), " "))).cast("bigint").as("uniq"))
-        .withColumn("score", expr("(uniq * 1000) DIV toks"))
-      val wB = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang", "source").orderBy(desc("score"), col("doc_id"))
-      val wW = org.apache.spark.sql.expressions.Window
-        .partitionBy("lang", "source").orderBy(col("score"), col("doc_id"))
-      val best = t.withColumn("rn", row_number().over(wB)).where(col("rn") === 1)
-        .select(col("lang"), col("source"), col("toks").as("chosen_toks"),
-          col("doc_id").as("chosen_id"))
-      val worst = t.withColumn("rn", row_number().over(wW)).where(col("rn") === 1)
-        .select(col("lang"), col("source"), col("toks").as("rejected_toks"),
-          col("doc_id").as("rejected_id"))
-      best.join(worst, Seq("lang", "source"))
-        .where(col("chosen_id") =!= col("rejected_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("chosen_toks") > col("rejected_toks"), 1L).otherwise(0L))
-            .as("n_chosen_longer"),
-          sum(when(col("chosen_toks") === col("rejected_toks"), 1L).otherwise(0L))
-            .as("n_ties"))
-        .withColumn("longer_ppm",
-          expr("(n_chosen_longer * 1000000) DIV (n_pairs - n_ties)"))
-        .withColumn("biased",
-          col("longer_ppm") > 600000L || col("longer_ppm") < 400000L)
-    }),
-
-    // Tool-call trace audit — agentic training data's equivalent of the
-    // quality rollup: traces are AUTHORED as real JSON (to_json over
-    // typed structs), then parsed back through from_json + explode —
-    // the serialize→parse roundtrip IS the op (a schema drift or quoting
-    // bug breaks the rollup) — and audited per tool: call counts, error
-    // rates, latency totals, all from the shared md5 randomness so the
-    // oracle can replay arithmetically without JSON.
-    "llm_tool_trace_audit" -> ((s, d) => {
-      val calls = (0 to 2).map { k =>
-        struct(
-          expr(s"CASE ${md5Bits(s"concat('tool:', CAST(doc_id AS STRING), ':$k')", 8)} % 3 WHEN 0 THEN 'code' WHEN 1 THEN 'fetch' ELSE 'search' END")
-            .as("tool"),
-          expr(s"IF(${md5Bits(s"concat('st:', CAST(doc_id AS STRING), ':$k')", 8)} % 5 = 0, 'error', 'ok')").as("status"),
-          expr(s"${md5Bits(s"concat('ms:', CAST(doc_id AS STRING), ':$k')", 8)} % 500").as("ms"))
-      }
-      Tables.documents(s, d).where(col("doc_id") % 15 === 0)
-        .select(col("doc_id"), to_json(array(calls: _*)).as("trace"))
-        .select(col("doc_id"),
-          from_json(col("trace"), org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "tool STRING, status STRING, ms BIGINT"))).as("calls"))
-        .select(explode(col("calls")).as("c"))
-        .groupBy(col("c.tool").as("tool"))
-        .agg(count(lit(1)).as("n_calls"),
-          sum(when(col("c.status") === "error", 1L).otherwise(0L)).as("n_errors"),
-          sum("c.ms").as("total_ms"))
-        .orderBy("tool")
-    }),
-
-    // Layout reading order — the document-AI preprocessing step between
-    // OCR boxes and text assembly (a page's boxes must serialize
-    // row-major or the text scrambles): 12 synthetic boxes per sampled
-    // page with md5-integer coordinates, ordered by (row band = y DIV
-    // 140, x, box) — the standard XY-cut approximation — and graded as a
-    // per-page order checksum Σ box_id·rank (any transposition changes
-    // it). Pure window arithmetic; pages are independent at any scale.
-    "mm_layout_reading_order" -> ((s, d) => {
-      val boxes = Tables.documents(s, d).where(col("doc_id") % 25 === 0)
-        .select(col("doc_id"), explode(expr("sequence(0, 11)")).as("box"))
-        .select(col("doc_id"), col("box"),
-          expr(s"${md5Bits("concat('x:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))", 8)} % 1000")
-            .as("x"),
-          expr(s"${md5Bits("concat('y:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))", 8)} % 1400")
-            .as("y"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy(expr("y DIV 140"), col("x"), col("box"))
-      boxes.withColumn("rank", row_number().over(w).cast("bigint"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_boxes"),
-          sum(col("box") * col("rank")).as("order_checksum"),
-          max(expr("y DIV 140")).as("max_band"))
-        .orderBy("doc_id")
-    }),
-
-    // Mergeable-statistics witness — the algebraic property EVERY
-    // distributed corpus-stats job leans on (partials from independent
-    // batches must merge to the full answer, or incremental pipelines
-    // silently drift): token-count moments computed per batch half, then
-    // MERGED (sums add, mins min, maxes max), graded side-by-side with
-    // the direct full-corpus pass — verdict column per statistic.
-    "llm_mergeable_stats" -> ((s, d) => {
-      val t = Tables.documents(s, d)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("bigint").as("tok"))
-        .withColumn("batch", col("doc_id") % 2)
-      val partials = t.groupBy("batch")
-        .agg(count(lit(1)).as("n"),
-          sum(col("tok").cast("decimal(38,0)")).cast("bigint").as("s"),
-          sum((col("tok") * col("tok")).cast("decimal(38,0)")).cast("bigint").as("q"),
-          min("tok").as("mn"), max("tok").as("mx"))
-      val merged = partials.agg(
-        sum("n").cast("bigint").as("m_n"), sum("s").cast("bigint").as("m_s"),
-        sum("q").cast("bigint").as("m_q"), min("mn").as("m_mn"), max("mx").as("m_mx"))
-      val full = t.agg(count(lit(1)).as("f_n"),
-        sum(col("tok").cast("decimal(38,0)")).cast("bigint").as("f_s"),
-        sum((col("tok") * col("tok")).cast("decimal(38,0)")).cast("bigint").as("f_q"),
-        min("tok").as("f_mn"), max("tok").as("f_mx"))
-      merged.crossJoin(full)
-        .select(col("m_n"), col("f_n"), col("m_s"), col("f_s"),
-          col("m_q"), col("f_q"), col("m_mn"), col("f_mn"),
-          col("m_mx"), col("f_mx"),
-          (col("m_n") === col("f_n") && col("m_s") === col("f_s") &&
-            col("m_q") === col("f_q") && col("m_mn") === col("f_mn") &&
-            col("m_mx") === col("f_mx")).as("merge_exact"))
-    })
-  )
-
-  val queries: Map[String, Q] = unique(mainQueries ++ extraQueries ++ shardQueries ++
-    wave6Queries ++ wave10Queries ++ wave11Queries: _*)
-
-  val oracles: Map[String, String] = unique(
-    // Same md5 facets, same exposure ledger.
-    "mm_exif_audit" ->
-      s"""WITH i AS (SELECT doc_id, source,
-        |    1 + ${duckMd5Bits("eo", "doc_id", 8)} % 8 AS orientation,
-        |    ${duckMd5Bits("eg", "doc_id", 8)} % 5 = 0 AS has_gps,
-        |    ${duckMd5Bits("et", "doc_id", 8)} % 3 < 2 AS has_ts
-        |  FROM documents WHERE doc_id % 40 = 0),
-        |g AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_images,
-        |    CAST(SUM(CASE WHEN has_gps THEN 1 ELSE 0 END) AS BIGINT) AS n_gps,
-        |    CAST(SUM(CASE WHEN has_ts THEN 1 ELSE 0 END) AS BIGINT) AS n_ts,
-        |    CAST(SUM(CASE WHEN orientation > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rotated
-        |  FROM i GROUP BY 1)
-        |SELECT source, n_images, n_gps, n_ts, n_rotated,
-        |  n_gps * 1000000 // n_images AS gps_ppm, n_gps > 0 AS must_strip
-        |FROM g ORDER BY source""".stripMargin,
-
-    // The bucket rollup replayed; the global max is a scalar subquery.
-    "llm_pad_efficiency" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
-        |  FROM documents),
-        |b AS (SELECT toks, toks // 32 AS bucket FROM t),
-        |g AS (SELECT MAX(toks) AS gmax FROM t)
-        |SELECT bucket, COUNT(*) AS n_docs,
-        |  CAST(SUM(toks) AS BIGINT) AS toks_sum,
-        |  CAST(MAX(toks) AS BIGINT) AS bucket_max,
-        |  CAST(MAX(toks) * COUNT(*) - SUM(toks) AS BIGINT) AS pad_bucketed,
-        |  CAST((SELECT gmax FROM g) * COUNT(*) - SUM(toks) AS BIGINT) AS pad_global
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // DuckDB's native ASOF JOIN replays the alignment; the windowed
-    // prefix sum rebuilds the irregular chunk starts.
-    "mm_av_sync" ->
-      """WITH d AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len
-        |           FROM documents WHERE doc_id % 20 = 0),
-        |fr AS (SELECT doc_id,
-        |    CAST(unnest(generate_series(0, (len + 31) // 32 - 1)) AS BIGINT) AS frame_idx
-        |  FROM d),
-        |f AS (SELECT doc_id, frame_idx, frame_idx * 32 AS ts FROM fr),
-        |ck0 AS (SELECT doc_id, len,
-        |    CAST(unnest(generate_series(0, (len + 19) // 20 - 1)) AS BIGINT) AS k
-        |  FROM d),
-        |ck1 AS (SELECT doc_id, len, k, 20 + (doc_id + k) % 13 AS clen FROM ck0),
-        |ck AS (SELECT doc_id, k,
-        |    CAST(SUM(clen) OVER (PARTITION BY doc_id ORDER BY k) - clen AS BIGINT)
-        |      AS strt, len
-        |  FROM ck1),
-        |cks AS (SELECT doc_id, k, strt FROM ck WHERE strt < len)
-        |SELECT f.doc_id, f.frame_idx, CAST(f.ts AS BIGINT) AS frame_off,
-        |  c.k AS chunk_idx, c.strt AS chunk_start,
-        |  CAST(f.ts - c.strt AS BIGINT) AS sync_lag
-        |FROM f ASOF JOIN cks c ON f.doc_id = c.doc_id AND c.strt <= f.ts
-        |ORDER BY f.doc_id, f.frame_idx""".stripMargin,
-
-    "llm_pack_sequences" ->
-      s"""WITH t AS (SELECT doc_id,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
-         |  FROM documents),
-         |b AS (SELECT *, u % 32 AS bucket FROM t),
-         |c AS (SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY bucket ORDER BY u, doc_id
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |      FROM b),
-         |p AS (SELECT *, bucket * $ShardIdSpan + (cum - n_tok) // $Ctx AS pack_id FROM c)
-         |SELECT pack_id, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-         |  MIN(doc_id) AS first_doc,
-         |  ROUND(CAST(SUM(n_tok) AS BIGINT) / ${Ctx.toDouble}, 4) AS fill
-         |FROM p GROUP BY pack_id ORDER BY pack_id""".stripMargin,
-
-    "llm_pii_redact" ->
-      """WITH a AS (SELECT doc_id,
-        |    text || ' contact ' || source || CAST(doc_id AS VARCHAR)
-        |      || '@example.com call +1-555-'
-        |      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS aug
-        |  FROM documents),
-        |r AS (SELECT doc_id, aug,
-        |    regexp_replace(
-        |      regexp_replace(aug, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\+1-555-[0-9]{4}', '<PHONE>', 'g') AS redacted
-        |  FROM a)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(aug, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-        |  CAST(len(regexp_extract_all(aug, '\+1-555-[0-9]{4}')) AS INT) AS n_phones,
-        |  CAST(length(redacted) AS INT) AS red_len,
-        |  right(redacted, 30) AS tail
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "llm_sample_stratified" ->
-      s"""WITH t AS (SELECT lang,
-        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
-        |    CASE WHEN lang = 'en' THEN 500 WHEN lang = 'de' THEN 250 ELSE 100 END AS rate_milli
-        |  FROM documents)
-        |SELECT lang, COUNT(*) AS n_total,
-        |  CAST(SUM(CASE WHEN u % 1000 < rate_milli THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-        |  CAST(MAX(rate_milli) AS BIGINT) AS rate_milli,
-        |  ROUND(CAST(SUM(CASE WHEN u % 1000 < rate_milli THEN 1 ELSE 0 END) AS BIGINT)
-        |    / CAST(COUNT(*) AS DOUBLE), 4) AS frac
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "mm_frame_sample" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
-        |           WHERE doc_id % 20 = 0),
-        |f AS (SELECT doc_id, text, len,
-        |        CAST((len + 31) // 32 AS INT) AS n_frames FROM d),
-        |x AS (SELECT doc_id, text, len,
-        |        CAST(unnest(generate_series(0, n_frames - 1, 4)) AS INT) AS frame_idx
-        |      FROM f)
-        |SELECT doc_id, frame_idx,
-        |  frame_idx * 32 AS off,
-        |  CAST(least(32, len - frame_idx * 32) AS INT) AS frame_len,
-        |  md5(substring(text, frame_idx * 32 + 1, 32)) AS frame_md5
-        |FROM x ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "llm_dedup_fuzzy" ->
-      """WITH p AS (SELECT doc_id, substring(text, 1, 8) AS b,
-        |             substring(text, 1, 40) AS pre FROM documents)
-        |SELECT x.doc_id AS a, y.doc_id AS b_id,
-        |  CAST(levenshtein(x.pre, y.pre) AS BIGINT) AS lev
-        |FROM p x JOIN p y ON x.b = y.b AND x.doc_id < y.doc_id
-        |WHERE levenshtein(x.pre, y.pre) <= 18
-        |ORDER BY a, b_id""".stripMargin,
-
-    "llm_embed_quantize" ->
-      """WITH m AS (
-        |  SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-        |    CAST(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))),
-        |      (acc, x) -> greatest(acc, x)) AS DOUBLE) AS max_abs,
-        |    embedding
-        |  FROM embeddings),
-        |q AS (SELECT vec_id, dim, max_abs,
-        |        list_transform(embedding,
-        |          x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / max_abs + 0.5) AS BIGINT)) AS qv
-        |      FROM m WHERE max_abs > 0)
-        |SELECT vec_id, dim, max_abs,
-        |  CAST(list_sum(qv) AS BIGINT) AS q_sum,
-        |  CAST(list_sum(list_transform(qv, v -> v * v)) AS BIGINT) AS q_norm2,
-        |  CAST(list_sum(list_transform(qv, v -> CAST(abs(v) = 127 AS BIGINT))) AS BIGINT) AS n_sat
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    "mm_patchify" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
-        |           WHERE doc_id % 20 = 1),
-        |pr AS (SELECT doc_id, text, len,
-        |         CAST(unnest(generate_series(0, CAST((len + 255) // 256 AS INT) - 1)) AS INT) AS pr
-        |       FROM d),
-        |g AS (SELECT doc_id, text, len, pr,
-        |        CAST(unnest(generate_series(0, 3)) AS INT) AS pc
-        |      FROM pr),
-        |p AS (SELECT doc_id, pr, pc,
-        |        array_to_string(list_transform(generate_series(0, 7),
-        |          r -> substring(text, (pr * 8 + r) * 32 + pc * 8 + 1, 8)), '') AS patch
-        |      FROM g)
-        |SELECT doc_id, pr, pc, CAST(length(patch) AS INT) AS patch_len,
-        |  md5(patch) AS patch_md5
-        |FROM p WHERE length(patch) > 0
-        |ORDER BY doc_id, pr, pc""".stripMargin,
-
-    "llm_sample_weighted" ->
-      s"""SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-        |  ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 15)}
-        |    // CAST(n_chars AS BIGINT) AS priority
-        |FROM documents WHERE n_chars > 0
-        |ORDER BY priority, doc_id LIMIT 50""".stripMargin,
-
-    "llm_embed_pq" ->
-      """WITH e AS (SELECT vec_id,
-        |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS xm,
-        |    generate_subscripts(embedding, 1) - 1 AS pos
-        |  FROM embeddings),
-        |st AS (SELECT pos, MIN(xm) AS mn, MAX(xm) AS mx FROM e GROUP BY 1),
-        |c AS (SELECT vec_id, e.pos, xm, mn, mx,
-        |    CASE WHEN mx = mn THEN CAST(0 AS BIGINT)
-        |         ELSE ((xm - mn) * 15) // (mx - mn) END AS code
-        |  FROM e JOIN st ON e.pos = st.pos),
-        |r AS (SELECT *, mn + (code * (mx - mn)) // 15 AS deq FROM c)
-        |SELECT vec_id,
-        |  CAST(SUM(CASE WHEN pos < 8 THEN code * CAST(pow(16, pos) AS BIGINT)
-        |           ELSE 0 END) AS BIGINT) AS code0,
-        |  CAST(SUM(abs(xm - deq)) AS BIGINT) AS err_total,
-        |  CAST(MAX(abs(xm - deq)) AS BIGINT) AS err_max
-        |FROM r GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    // The SPEC form: one global ROW_NUMBER states the serpentine deal the
-    // banded Spark plan must reproduce exactly.
-    "llm_shard_balance" ->
-      """WITH t AS (SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens
-        |  FROM documents),
-        |r AS (SELECT doc_id, tokens,
-        |    ROW_NUMBER() OVER (ORDER BY tokens DESC, doc_id) AS rank FROM t),
-        |a AS (SELECT tokens,
-        |    CASE WHEN ((rank - 1) // 8) % 2 = 0 THEN (rank - 1) % 8
-        |         ELSE 7 - (rank - 1) % 8 END AS shard
-        |  FROM r)
-        |SELECT CAST(shard AS BIGINT) AS shard, COUNT(*) AS n_docs,
-        |  CAST(SUM(tokens) AS BIGINT) AS tok_total,
-        |  CAST(MAX(tokens) AS BIGINT) AS tok_max
-        |FROM a GROUP BY shard ORDER BY shard""".stripMargin,
-
-    // Same two ROW_NUMBER picks under the same total order.
-    "llm_preference_pairs" ->
-      """WITH t AS (SELECT doc_id, lang, source,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq
-        |  FROM documents),
-        |sc AS (SELECT *, (uniq * 1000) // toks AS score FROM t),
-        |b AS (SELECT lang, source, doc_id AS chosen_id, score AS chosen_score
-        |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY lang, source
-        |          ORDER BY score DESC, doc_id) AS rn FROM sc) WHERE rn = 1),
-        |w AS (SELECT lang, source, doc_id AS rejected_id, score AS rejected_score
-        |  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY lang, source
-        |          ORDER BY score ASC, doc_id) AS rn FROM sc) WHERE rn = 1)
-        |SELECT b.lang, b.source, chosen_id, chosen_score,
-        |  rejected_id, rejected_score,
-        |  CAST(chosen_score - rejected_score AS BIGINT) AS margin
-        |FROM b JOIN w ON b.lang = w.lang AND b.source = w.source
-        |WHERE chosen_id <> rejected_id
-        |ORDER BY b.lang, b.source""".stripMargin,
-
-    // Deterministic negative replay: same affine sample, same bump rule.
-    "mm_contrastive_pairs" ->
-      """WITH n AS (SELECT COUNT(*) AS n_vecs FROM embeddings),
-        |a AS (SELECT doc_id, vec_id FROM documents
-        |      JOIN embeddings ON doc_id = vec_id),
-        |x AS (SELECT doc_id, vec_id, CAST(unnest([1, 2, 3]) AS BIGINT) AS j FROM a),
-        |r AS (SELECT doc_id, vec_id, j,
-        |    (doc_id * 31 + j * 7919) % n_vecs AS raw, n_vecs
-        |  FROM x, n)
-        |SELECT doc_id AS anchor, vec_id AS pos_vec, j AS neg_rank,
-        |  CAST(CASE WHEN raw = doc_id THEN (raw + 1) % n_vecs ELSE raw END AS BIGINT) AS neg_vec
-        |FROM r ORDER BY anchor, neg_rank""".stripMargin,
-
-    "mm_audio_chunks" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents
-        |           WHERE doc_id % 10 = 3),
-        |x AS (SELECT doc_id, text, len,
-        |        CAST(unnest(generate_series(0, len - 1, 16)) AS INT) AS off
-        |      FROM d)
-        |SELECT doc_id, CAST(off // 16 AS INT) AS chunk_idx, off,
-        |  CAST(least(48, len - off) AS INT) AS chunk_len,
-        |  md5(substring(text, off + 1, 48)) AS chunk_md5
-        |FROM x ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // Bucketed byte-budget packing replayed with the same constants.
-    "mm_shard_pack" ->
-      s"""WITH t AS (SELECT doc_id, CAST(n_chars + $RecHeader AS BIGINT) AS bytes,
-         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
-         |  FROM documents),
-         |b AS (SELECT *, u % 8 AS bucket FROM t),
-         |c AS (SELECT *, CAST(SUM(bytes) OVER (PARTITION BY bucket ORDER BY u, doc_id
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |      FROM b),
-         |p AS (SELECT *, bucket * $ShardIdSpan + (cum - bytes) // $ShardBytes AS shard_id
-         |      FROM c)
-         |SELECT shard_id, COUNT(*) AS n_docs, CAST(SUM(bytes) AS BIGINT) AS n_bytes,
-         |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
-         |  (CAST(SUM(bytes) AS BIGINT) * 1000) // $ShardBytes AS fill_milli
-         |FROM p GROUP BY shard_id ORDER BY shard_id""".stripMargin,
-
-    // Same synthetic geometry, same integer resize/pad accounting.
-    "mm_resolution_bucket" ->
-      s"""WITH g AS MATERIALIZED (SELECT doc_id,
-        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
-        |  FROM documents),
-        |m AS (SELECT doc_id, 256 + (u % 8) * 128 AS w,
-        |    256 + ((u // 8) % 8) * 128 AS h FROM g),
-        |r AS (SELECT *, (w * 1000) // h AS ratio_milli FROM m),
-        |b AS (SELECT *,
-        |    CASE WHEN ratio_milli < 667 THEN 'portrait_tall'
-        |         WHEN ratio_milli < 910 THEN 'portrait'
-        |         WHEN ratio_milli <= 1100 THEN 'square'
-        |         WHEN ratio_milli <= 1500 THEN 'landscape'
-        |         ELSE 'landscape_wide' END AS bucket FROM r),
-        |t AS (SELECT *,
-        |    CAST(CASE bucket WHEN 'portrait_tall' THEN 768 WHEN 'portrait' THEN 832
-        |      WHEN 'square' THEN 1024 WHEN 'landscape' THEN 1152
-        |      ELSE 1344 END AS BIGINT) AS tw,
-        |    CAST(CASE bucket WHEN 'portrait_tall' THEN 1344 WHEN 'portrait' THEN 1152
-        |      WHEN 'square' THEN 1024 WHEN 'landscape' THEN 832
-        |      ELSE 768 END AS BIGINT) AS th FROM b),
-        |sc AS (SELECT *, LEAST((tw * 1000) // w, (th * 1000) // h) AS scale_milli
-        |  FROM t),
-        |f AS (SELECT *, (w * scale_milli) // 1000 AS sw,
-        |    (h * scale_milli) // 1000 AS sh FROM sc)
-        |SELECT bucket, tw, th, COUNT(*) AS n_images,
-        |  CAST(SUM(w * h) AS BIGINT) AS src_px,
-        |  CAST(SUM(tw * th - sw * sh) AS BIGINT) AS pad_px,
-        |  (CAST(SUM(tw * th - sw * sh) AS BIGINT) * 1000000)
-        |    // (COUNT(*) * tw * th) AS pad_ppm
-        |FROM f GROUP BY bucket, tw, th ORDER BY bucket""".stripMargin,
-
-    // Same WFQ virtual-time schedule, replayed with windows + QUALIFY-free
-    // nesting (the limit is a plain ORDER BY ... LIMIT in DuckDB too).
-    "llm_interleave_mixture" ->
-      s"""WITH g AS MATERIALIZED (SELECT doc_id, lang,
-        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
-        |    CAST(CASE lang WHEN 'en' THEN 5 WHEN 'es' THEN 3 WHEN 'de' THEN 3
-        |      WHEN 'fr' THEN 2 ELSE 2 END AS BIGINT) AS wt
-        |  FROM documents),
-        |s AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY u, doc_id)
-        |    AS BIGINT) AS seq FROM g),
-        |v AS (SELECT *, (seq * 1000000) // wt AS vtime FROM s),
-        |l AS (SELECT * FROM v ORDER BY vtime, lang, doc_id LIMIT 200)
-        |SELECT CAST(ROW_NUMBER() OVER (ORDER BY vtime, lang, doc_id) AS BIGINT) AS pos,
-        |  vtime, lang, doc_id
-        |FROM l ORDER BY pos""".stripMargin,
-
-    // Same weights, same per-stratum cumsum, same boundary-crossing rule.
-    "llm_importance_resample" ->
-      s"""WITH t AS MATERIALIZED (SELECT doc_id, lang,
-        |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq
-        |  FROM documents),
-        |w AS (SELECT *, (uniq * 1000) // toks + 1 AS w FROM t),
-        |c AS (SELECT *, CAST(SUM(w) OVER (PARTITION BY lang ORDER BY u, doc_id
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |      FROM w),
-        |g AS (SELECT lang, CAST(SUM(w) AS BIGINT) AS wtot FROM w GROUP BY 1),
-        |s AS (SELECT c.*, g.wtot,
-        |    (cum * 50) // wtot > ((cum - w) * 50) // wtot AS sel
-        |  FROM c JOIN g USING (lang))
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(MAX(wtot) AS BIGINT) AS w_total,
-        |  CAST(SUM(CASE WHEN sel THEN 1 ELSE 0 END) AS BIGINT) AS n_selected,
-        |  CAST(SUM(CASE WHEN sel THEN w ELSE 0 END) AS BIGINT) AS w_selected,
-        |  MIN(CASE WHEN sel THEN doc_id END) AS first_sel
-        |FROM s GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // Same 31-tile resize, 2-bit tile fingerprints, capped band buckets,
-    // and exact-hamming verify.
-    "mm_dedup_phash" ->
-      s"""WITH t AS MATERIALIZED (SELECT doc_id, text,
-        |    CAST(length(text) AS BIGINT) AS len,
-        |    (CAST(length(text) AS BIGINT) + 30) // 31 AS tl
-        |  FROM documents WHERE length(text) >= 64),
-        |b AS (SELECT doc_id,
-        |    ((${duckMd5Bits("substring(text, CAST(i * tl AS INT) + 1, CAST(tl AS INT))", 1)} & 3) << (2 * i)) AS contrib
-        |  FROM t, (SELECT unnest(range(0, 31)) AS i)),
-        |ph AS MATERIALIZED (SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS ph
-        |  FROM b GROUP BY 1),
-        |bands AS MATERIALIZED (SELECT doc_id, ph, k, (ph >> (k * 16)) & 65535 AS bv
-        |  FROM ph, (SELECT unnest(range(0, 4)) AS k)),
-        |live AS (SELECT k, bv FROM bands GROUP BY 1, 2 HAVING COUNT(*) <= 64),
-        |capped AS MATERIALIZED (SELECT bands.* FROM bands JOIN live USING (k, bv)),
-        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-        |    x.ph AS pa, y.ph AS pb
-        |  FROM capped x JOIN capped y
-        |    ON x.k = y.k AND x.bv = y.bv AND x.doc_id < y.doc_id)
-        |SELECT a, b, CAST(bit_count(xor(pa, pb)) AS INT) AS hamming
-        |FROM cand WHERE bit_count(xor(pa, pb)) <= 8
-        |ORDER BY a, b""".stripMargin,
-
-    // Same split law, same prefix-sum offsets, same re-slice check.
-    "llm_tokenize_offsets" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks
-        |  FROM documents WHERE doc_id % 20 = 2),
-        |u AS (SELECT doc_id, text,
-        |    unnest(toks) AS token,
-        |    CAST(generate_subscripts(toks, 1) - 1 AS BIGINT) AS pos
-        |  FROM t),
-        |w AS (SELECT doc_id, text, pos, token,
-        |    CAST(length(token) AS BIGINT) AS tlen,
-        |    CAST(SUM(length(token) + 1) OVER (PARTITION BY doc_id ORDER BY pos
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |      - length(token) - 1 AS BIGINT) AS start_off
-        |  FROM u)
-        |SELECT doc_id, pos, token, start_off, start_off + tlen AS end_off,
-        |  substring(text, CAST(start_off AS INT) + 1, CAST(tlen AS INT)) = token AS ok
-        |FROM w ORDER BY doc_id, pos""".stripMargin,
-
-    // Same QI rollup, same generalize-below-k re-aggregation.
-    "llm_k_anonymity" ->
-      """WITH g AS (SELECT lang, source,
-        |    CAST(n_chars AS BIGINT) // 200 AS len_bucket,
-        |    CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM documents GROUP BY 1, 2, 3),
-        |m AS (SELECT
-        |    CASE WHEN n >= 5 THEN lang ELSE '*' END AS lang,
-        |    CASE WHEN n >= 5 THEN source ELSE '*' END AS source,
-        |    CASE WHEN n >= 5 THEN len_bucket ELSE -1 END AS len_bucket,
-        |    n, n >= 5 AS released
-        |  FROM g)
-        |SELECT lang, source, len_bucket, released,
-        |  CAST(SUM(n) AS BIGINT) AS n_docs, CAST(COUNT(*) AS BIGINT) AS n_groups
-        |FROM m GROUP BY 1, 2, 3, 4
-        |ORDER BY lang, source, len_bucket""".stripMargin,
-
-    // Same shingle law, same first-owner window, same exact ppm.
-    "llm_ngram_novelty" ->
-      """WITH dd AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
-        |       FROM dd),
-        |f AS (SELECT doc_id, s,
-        |    CAST(MIN(doc_id) OVER (PARTITION BY s) AS BIGINT) AS first_doc
-        |  FROM sh),
-        |g AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-        |    CAST(SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-        |  FROM f GROUP BY 1)
-        |SELECT doc_id, n_shingles, n_novel,
-        |  (n_novel * 1000000) // n_shingles AS novelty_ppm
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Same bucket/sign hash law, same signed-sum features.
-    "llm_feature_hashing" ->
-      s"""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |h AS (SELECT doc_id,
-        |    ${duckMd5Bits("w", 8)} AS h FROM tk),
-        |f AS (SELECT doc_id, h % 16 AS bucket,
-        |    CAST(CASE WHEN (h // 16) % 2 = 0 THEN 1 ELSE -1 END AS BIGINT) AS sgn
-        |  FROM h)
-        |SELECT doc_id, bucket, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(sgn) AS BIGINT) AS feat
-        |FROM f GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
-
-    // Same frame geometry, same 8-bit fingerprint, same lag threshold.
-    "mm_scene_cut" ->
-      s"""WITH d AS (SELECT doc_id, text, length(text) AS len
-        |  FROM documents WHERE doc_id % 20 = 0 AND length(text) >= 1),
-        |f AS (SELECT doc_id, i AS frame_idx,
-        |    ${duckMd5Bits("substring(text, i * 32 + 1, 32)", 2)} AS fp
-        |  FROM d, LATERAL (SELECT unnest(range(0, CAST((len + 31) // 32 AS INT))) AS i)),
-        |l AS (SELECT doc_id, frame_idx, fp,
-        |    LAG(fp) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev_fp
-        |  FROM f)
-        |SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx, fp, prev_fp,
-        |  CAST(bit_count(xor(fp, prev_fp)) AS BIGINT) AS hd
-        |FROM l WHERE bit_count(xor(fp, prev_fp)) >= 5
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // Same top-5 derivation (count DESC, token tiebreak), same ppm law.
-    "llm_stopword_density" ->
-      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |stop AS (SELECT w AS sw FROM tk GROUP BY w
-        |  ORDER BY COUNT(*) DESC, w LIMIT 5),
-        |g AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |    CAST(SUM(CASE WHEN sw IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-        |  FROM tk LEFT JOIN stop ON tk.w = stop.sw
-        |  GROUP BY 1)
-        |SELECT doc_id, n_tokens, n_stop,
-        |  (n_stop * 1000000) // n_tokens AS density_ppm,
-        |  (n_stop * 1000000) // n_tokens > 400000 AS boilerplate
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Same two-level rollup, same ppm ratios.
-    "llm_ttr_diversity" ->
-      """WITH tk AS (SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents),
-        |tc AS (SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS c FROM tk GROUP BY 1, 2),
-        |g AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS n_tokens,
-        |    CAST(COUNT(*) AS BIGINT) AS n_types,
-        |    CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax
-        |  FROM tc GROUP BY 1)
-        |SELECT lang, n_tokens, n_types, n_hapax,
-        |  (n_types * 1000000) // n_tokens AS ttr_ppm,
-        |  (n_hapax * 1000000) // n_types AS hapax_ppm
-        |FROM g ORDER BY lang""".stripMargin,
-
-    // Same rolling-window boundary law, same lag-spanned chunks.
-    "llm_cdc_chunk" ->
-      s"""WITH d AS (SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len
-        |  FROM documents WHERE doc_id % 10 = 5 AND length(text) >= 8),
-        |hb AS (SELECT doc_id, CAST(i AS BIGINT) AS b
-        |  FROM d, LATERAL (SELECT unnest(range(8, CAST(len AS INT) + 1)) AS i)
-        |  WHERE ${duckMd5Bits("substring(text, CAST(i - 7 AS INT), 8)", 4)} % 64 = 0),
-        |bounds AS (SELECT DISTINCT doc_id, b FROM
-        |  (SELECT doc_id, b FROM hb UNION ALL SELECT doc_id, len FROM d)),
-        |sp AS (SELECT doc_id, b,
-        |    COALESCE(LAG(b) OVER (PARTITION BY doc_id ORDER BY b), 0) AS start
-        |  FROM bounds),
-        |ch AS (SELECT sp.doc_id, sp.b, sp.start,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY sp.doc_id ORDER BY sp.b) AS BIGINT) - 1 AS chunk_idx,
-        |    d.text
-        |  FROM sp JOIN d ON d.doc_id = sp.doc_id
-        |  WHERE sp.b > sp.start)
-        |SELECT doc_id, chunk_idx, start, b - start AS chunk_len,
-        |  md5(substring(text, CAST(start AS INT) + 1, CAST(b - start AS INT))) AS chunk_md5
-        |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // Both graded pipelines replayed (llm_sim_topk's exact scan and
-    // llm_sim_ann's IVF search), then the same left-join recall rollup.
-    "llm_ann_recall" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |p AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
-        |exact AS (SELECT probe_id, neighbor_id FROM (
-        |  SELECT probe_id, vec_id AS neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY probe_id
-        |      ORDER BY ROUND(list_cosine_similarity(p_emb, emb), 4) DESC, vec_id) AS rnk
-        |  FROM p, e WHERE vec_id <> probe_id)
-        |  WHERE rnk <= 5),
-        |st AS (SELECT COUNT(*) AS n_tot FROM e),
-        |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
-        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
-        |               < 4294967296.0 / sqrt(n_tot * 1.0)),
-        |assigned AS (
-        |  SELECT vec_id, emb, cluster FROM (
-        |    SELECT e.vec_id, e.emb, c.cid AS cluster,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY ROUND(list_cosine_similarity(e.emb, c.cemb), 4) DESC, c.cid) AS crn
-        |    FROM e CROSS JOIN cent c)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT probe_id, p_emb, cluster FROM (
-        |    SELECT p.probe_id, p.p_emb, c.cid AS cluster,
-        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
-        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, c.cemb), 4) DESC, c.cid) AS prn
-        |    FROM p CROSS JOIN cent c)
-        |  WHERE prn <= 4),
-        |ann AS (SELECT probe_id, neighbor_id, 1 AS hit FROM (
-        |  SELECT pr.probe_id, a.vec_id AS neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY pr.probe_id
-        |      ORDER BY ROUND(list_cosine_similarity(pr.p_emb, a.emb), 4) DESC, a.vec_id) AS rnk
-        |  FROM probes pr JOIN assigned a ON pr.cluster = a.cluster
-        |  WHERE a.vec_id <> pr.probe_id)
-        |  WHERE rnk <= 5)
-        |SELECT exact.probe_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-        |  CAST(SUM(COALESCE(hit, 0)) AS BIGINT) AS n_hit,
-        |  (CAST(SUM(COALESCE(hit, 0)) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT) AS recall_ppm
-        |FROM exact LEFT JOIN ann
-        |  ON ann.probe_id = exact.probe_id AND ann.neighbor_id = exact.neighbor_id
-        |GROUP BY exact.probe_id ORDER BY 1""".stripMargin,
-
-    // Same bigram hash, same sqrt z, same integer verdict.
-    "llm_watermark_detect" ->
-      s"""WITH tk AS (SELECT doc_id, w, pos FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-        |      generate_subscripts(string_split(text, ' '), 1) AS pos
-        |    FROM documents)),
-        |bg AS (SELECT doc_id, w,
-        |    LAG(w) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-        |  FROM tk),
-        |g AS (SELECT doc_id,
-        |    CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-        |    CAST(SUM(CASE WHEN ${duckMd5Bits("prev || '|' || w", 8)} % 4 = 0
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_green
-        |  FROM bg WHERE prev IS NOT NULL GROUP BY 1)
-        |SELECT doc_id, n_bigrams, n_green,
-        |  CAST(4 * n_green - n_bigrams AS DOUBLE) / sqrt(CAST(3 * n_bigrams AS DOUBLE)) AS z,
-        |  4 * n_green - n_bigrams > 0
-        |    AND (4 * n_green - n_bigrams) * (4 * n_green - n_bigrams) > 12 * n_bigrams AS watermarked
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Same block-hash mask law, same flag-string fingerprint.
-    "llm_span_corruption" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS t
-        |  FROM documents WHERE doc_id % 10 = 7),
-        |f AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n,
-        |    list_transform(range(0, len(t)), i ->
-        |      CASE WHEN ${duckMd5Bits("CAST(doc_id AS VARCHAR) || ':' || CAST(i // 3 AS VARCHAR)", 8)} % 8 = 0
-        |      THEN '1' ELSE '0' END) AS flags
-        |  FROM d),
-        |m AS (SELECT doc_id, n, flags,
-        |    CAST(len(list_filter(flags, f -> f = '1')) AS BIGINT) AS n_masked,
-        |    CAST(len(list_filter(range(0, CAST((n + 2) // 3 AS INT)), j ->
-        |      ${duckMd5Bits("CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)", 8)} % 8 = 0)) AS BIGINT) AS n_spans
-        |  FROM f)
-        |SELECT doc_id, n AS n_tokens, n_masked, n_spans,
-        |  ((n - n_masked) * 1000000) // n AS visible_ppm,
-        |  md5(array_to_string(flags, '')) AS mask_md5
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // Same exact integer sqrt (±1-corrected), same ppm shares.
-    "llm_mixture_temperature" ->
-      """WITH g AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY 1),
-        |k AS (SELECT *, CAST(sqrt(CAST(n_tokens AS DOUBLE)) AS BIGINT) AS k0 FROM g),
-        |w AS (SELECT lang, n_docs, n_tokens,
-        |    CAST(CASE WHEN (k0 + 1) * (k0 + 1) <= n_tokens THEN k0 + 1
-        |         WHEN k0 * k0 > n_tokens THEN k0 - 1 ELSE k0 END AS BIGINT) AS w
-        |  FROM k),
-        |t AS (SELECT CAST(SUM(w) AS BIGINT) AS w_total,
-        |    CAST(SUM(n_tokens) AS BIGINT) AS tok_total FROM w)
-        |SELECT lang, n_docs, n_tokens, w,
-        |  (n_tokens * 1000000) // tok_total AS natural_ppm,
-        |  (w * 1000000) // w_total AS sampled_ppm
-        |FROM w, t ORDER BY lang""".stripMargin,
-
-    // Same stride-48 window law, same clamped tail, same slice hash.
-    "llm_chunk_overlap" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS t,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |  FROM documents WHERE doc_id % 10 = 1),
-        |c AS (SELECT doc_id, t, n, CAST(i AS BIGINT) AS chunk_idx,
-        |    CAST(i AS BIGINT) * 48 AS start_tok
-        |  FROM d, LATERAL (SELECT unnest(range(0,
-        |    CAST(GREATEST((n - 17) // 48, 0) AS INT) + 1)) AS i))
-        |SELECT doc_id, chunk_idx, start_tok,
-        |  LEAST(64, n - start_tok) AS chunk_toks,
-        |  md5(array_to_string(array_slice(t, CAST(start_tok AS INT) + 1,
-        |    CAST(start_tok + LEAST(64, n - start_tok) AS INT)), ' ')) AS chunk_md5
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // Same distinct vocabularies, same canonical pair join, same ppm.
-    "llm_vocab_overlap" ->
-      """WITH v AS MATERIALIZED (SELECT DISTINCT lang, w FROM (
-        |    SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents)),
-        |sz AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM v GROUP BY 1),
-        |i AS (SELECT x.lang AS lang_a, y.lang AS lang_b,
-        |    CAST(COUNT(*) AS BIGINT) AS n_shared
-        |  FROM v x JOIN v y ON x.w = y.w AND x.lang < y.lang
-        |  GROUP BY 1, 2)
-        |SELECT lang_a, lang_b, sa.n AS n_a, sb.n AS n_b, n_shared,
-        |  (n_shared * 1000000) // (sa.n + sb.n - n_shared) AS jaccard_ppm
-        |FROM i JOIN sz sa ON sa.lang = i.lang_a
-        |JOIN sz sb ON sb.lang = i.lang_b
-        |ORDER BY lang_a, lang_b""".stripMargin,
-
-    // Same rounded-cosine band, same ordered-limit per anchor.
-    "llm_hard_negatives" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |p AS (SELECT vec_id AS anchor_id, emb AS a_emb FROM e WHERE vec_id < 10),
-        |sim AS (SELECT anchor_id, vec_id AS negative_id,
-        |    ROUND(list_cosine_similarity(a_emb, emb), 4) AS sim
-        |  FROM p, e WHERE vec_id <> anchor_id),
-        |b AS (SELECT * FROM sim WHERE sim >= 0.05 AND sim < 0.5),
-        |r AS (SELECT anchor_id, negative_id, sim,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY anchor_id
-        |      ORDER BY sim DESC, negative_id) AS INT) AS rnk
-        |  FROM b)
-        |SELECT anchor_id, negative_id, sim, rnk FROM r WHERE rnk <= 3
-        |ORDER BY anchor_id, rnk""".stripMargin,
-
-    // Same chained gates, same one-pass flags, same funnel unpivot.
-    "llm_filter_funnel" ->
-      """WITH f AS (SELECT doc_id, lang, text,
-        |    CAST(n_chars AS BIGINT) AS len,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq,
-        |    ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) = 1 AS first_of_text
-        |  FROM documents),
-        |g AS (SELECT *,
-        |    len >= 64 AS g1,
-        |    len >= 64 AND lang IN ('en', 'de', 'fr', 'es', 'ja') AS g2,
-        |    len >= 64 AND lang IN ('en', 'de', 'fr', 'es', 'ja')
-        |      AND (uniq * 1000) // toks >= 300 AS g3,
-        |    len >= 64 AND lang IN ('en', 'de', 'fr', 'es', 'ja')
-        |      AND (uniq * 1000) // toks >= 300 AND first_of_text AS g4
-        |  FROM f),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-        |    CAST(SUM(CASE WHEN g1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(SUM(CASE WHEN g2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |    CAST(SUM(CASE WHEN g3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |    CAST(SUM(CASE WHEN g4 THEN 1 ELSE 0 END) AS BIGINT) AS n4
-        |  FROM g),
-        |u AS (
-        |  SELECT 1 AS stage, 'min_length' AS gate, n0 AS n_in, n1 AS n_out FROM a
-        |  UNION ALL SELECT 2, 'known_lang', n1, n2 FROM a
-        |  UNION ALL SELECT 3, 'diversity', n2, n3 FROM a
-        |  UNION ALL SELECT 4, 'exact_dedup', n3, n4 FROM a)
-        |SELECT CAST(stage AS BIGINT) AS stage, gate, n_in, n_out,
-        |  ((n_in - n_out) * 1000000) // n_in AS drop_ppm
-        |FROM u ORDER BY stage""".stripMargin,
-
-    // Same top-30 cut, same rank·freq invariant, same ppm scaling.
-    "llm_zipf_check" ->
-      """WITH tk AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        |v AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM tk GROUP BY 1
-        |  ORDER BY freq DESC, w LIMIT 30),
-        |r AS (SELECT w, freq,
-        |    CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, w) AS BIGINT) AS rank
-        |  FROM v),
-        |m AS (SELECT CAST(MAX(freq) AS BIGINT) AS f1 FROM v)
-        |SELECT rank, w AS token, freq, CAST(rank * freq AS BIGINT) AS zipf_product,
-        |  (rank * freq * 1000000) // f1 AS rel_ppm
-        |FROM r, m ORDER BY rank""".stripMargin,
-
-    // Same ordered fold, same micro floor, same bands.
-    "mm_embedding_norm_audit" ->
-      """WITH n AS (SELECT vec_id,
-        |    CAST(floor(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |      list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)),
-        |      (acc, x) -> acc + x) * 1000000) AS BIGINT) AS l2sq_micro
-        |  FROM embeddings),
-        |b AS (SELECT *, l2sq_micro // 2000000 AS band FROM n)
-        |SELECT band, CAST(COUNT(*) AS BIGINT) AS n_vectors,
-        |  CAST(MIN(l2sq_micro) AS BIGINT) AS min_l2sq,
-        |  CAST(MAX(l2sq_micro) AS BIGINT) AS max_l2sq,
-        |  CAST(SUM(CASE WHEN l2sq_micro < 100000 THEN 1 ELSE 0 END) AS BIGINT) AS n_near_zero
-        |FROM b GROUP BY 1 ORDER BY band""".stripMargin,
-
-    // Same md5(epoch:doc) shuffle order, same round-robin mod-4 sharding,
-    // same whole-batch trim — integer end to end.
-    "llm_dataloader_epoch_plan" ->
-      s"""WITH e AS (SELECT 0 AS epoch UNION ALL SELECT 1),
-        |s AS (SELECT epoch, doc_id,
-        |    ${duckMd5Bits("CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)", 8)} AS u
-        |  FROM documents, e),
-        |p AS (SELECT epoch, doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY epoch ORDER BY u, doc_id) AS BIGINT) - 1 AS pos
-        |  FROM s),
-        |r AS (SELECT epoch, doc_id, pos % 4 AS rnk, pos // 4 AS rank_pos FROM p),
-        |g AS (SELECT *, COUNT(*) OVER (PARTITION BY epoch, rnk) AS n_rank FROM r)
-        |SELECT CAST(epoch AS BIGINT) AS epoch, rnk AS rank,
-        |  CAST(COUNT(*) AS BIGINT) AS n_samples,
-        |  CAST(COUNT(*) // 8 AS BIGINT) AS n_batches,
-        |  CAST(SUM(CASE WHEN rank_pos < (n_rank // 8) * 8 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
-        |  CAST(SUM(CASE WHEN rank_pos < (n_rank // 8) * 8 THEN doc_id ELSE 0 END) AS BIGINT) AS used_checksum
-        |FROM g GROUP BY epoch, rnk ORDER BY epoch, rank""".stripMargin,
-
-    // Same bucketed prefix-sum pack assignment as llm_pack_sequences;
-    // cells in exact BIGINT (max (Σtok)²·10⁶ ≈ 10¹² — no overflow).
-    "llm_attention_block_savings" ->
-      s"""WITH t AS (SELECT doc_id,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         |    ${duckMd5Bits("CAST(doc_id AS VARCHAR)", 8)} AS u
-         |  FROM documents),
-         |b AS (SELECT *, u % 32 AS bucket FROM t),
-         |c AS (SELECT *, CAST(SUM(n_tok) OVER (PARTITION BY bucket ORDER BY u, doc_id
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-         |      FROM b),
-         |p AS (SELECT *, bucket * $ShardIdSpan + (cum - n_tok) // $Ctx AS pack_id FROM c),
-         |g AS (SELECT pack_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |    CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-         |    CAST(SUM(n_tok * n_tok) AS BIGINT) AS blocked_cells
-         |  FROM p GROUP BY pack_id)
-         |SELECT pack_id, n_docs, n_tokens, blocked_cells,
-         |  n_tokens * n_tokens AS full_cells,
-         |  ((n_tokens * n_tokens - blocked_cells) * 1000000) // (n_tokens * n_tokens)
-         |    AS savings_ppm
-         |FROM g ORDER BY pack_id""".stripMargin,
-
-    // strlen = UTF-8 bytes, length = chars in DuckDB — the same
-    // byte/char split as Spark's octet_length/length.
-    "llm_tokenizer_fertility" ->
-      """WITH t AS (SELECT lang,
-        |    CAST(strlen(text) AS BIGINT) AS bytes,
-        |    CAST(length(text) AS BIGINT) AS chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
-        |  FROM documents),
-        |g AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |    CAST(SUM(bytes) AS BIGINT) AS sum_bytes,
-        |    CAST(SUM(chars) AS BIGINT) AS sum_chars,
-        |    CAST(SUM(toks) AS BIGINT) AS sum_tokens
-        |  FROM t GROUP BY lang)
-        |SELECT lang, n_docs, sum_bytes, sum_chars, sum_tokens,
-        |  (sum_bytes * 1000) // sum_tokens AS bytes_per_token_milli,
-        |  (sum_chars * 1000) // sum_tokens AS chars_per_token_milli
-        |FROM g ORDER BY lang""".stripMargin,
-
-    // Same template literals, same span arithmetic, same md5.
-    "llm_sft_chat_template" ->
-      """WITH pr AS (SELECT p.doc_id AS pair_id,
-        |    '<|system|>You are a helpful assistant.
-        |<|user|>' || p.text || '
-        |<|assistant|>' || r.text || '<|end|>' AS rendered,
-        |    CAST(length(r.text) AS BIGINT) AS asst_len
-        |  FROM documents p JOIN documents r ON r.doc_id = p.doc_id + 1
-        |  WHERE p.doc_id % 10 = 4)
-        |SELECT pair_id,
-        |  CAST(length(rendered) AS BIGINT) AS total_len,
-        |  CAST(length(rendered) AS BIGINT) - asst_len - 7 AS asst_off,
-        |  asst_len,
-        |  (asst_len * 1000000) // CAST(length(rendered) AS BIGINT) AS mask_ppm,
-        |  md5(rendered) AS render_md5
-        |FROM pr ORDER BY pair_id""".stripMargin,
-
-    // Same two independent md5 draws, same decile buckets, same integer
-    // milli gaps.
-    "llm_calibration_error" ->
-      s"""WITH t AS (SELECT doc_id,
-        |    ${duckMd5Bits("c", "doc_id", 8)} % 1000 AS conf,
-        |    ${duckMd5Bits("y", "doc_id", 8)} % 1000 AS draw
-        |  FROM documents),
-        |b AS (SELECT conf // 100 AS bucket, conf, draw < conf AS y FROM t),
-        |g AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(conf) AS BIGINT) AS sum_conf,
-        |    CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-        |  FROM b GROUP BY bucket)
-        |SELECT bucket, n, sum_conf // n AS conf_milli,
-        |  (n_pos * 1000) // n AS acc_milli,
-        |  abs(sum_conf // n - (n_pos * 1000) // n) AS gap_milli
-        |FROM g ORDER BY bucket""".stripMargin,
-
-    // The generator rule replayed arithmetically: header length by
-    // doc_id/40 mod 3 (png 8, jpeg 3, wav 12), bytes = strlen + header.
-    "mm_magic_sniff" ->
-      """WITH b AS (SELECT doc_id, (doc_id // 40) % 3 AS kind,
-        |    CAST(strlen(text) AS BIGINT) AS body
-        |  FROM documents WHERE doc_id % 40 = 0)
-        |SELECT CASE kind WHEN 0 THEN 'image_png' WHEN 1 THEN 'image_jpeg'
-        |    ELSE 'audio_wav' END AS modality,
-        |  CAST(COUNT(*) AS BIGINT) AS n_files,
-        |  CAST(SUM(body + CASE kind WHEN 0 THEN 8 WHEN 1 THEN 3 ELSE 12 END) AS BIGINT)
-        |    AS sum_bytes
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // The whole IVF-PQ pipeline replayed: same micro dims, same PQ grid,
-    // same md5 centroids, same integer dots, same (qdot, id) top-3.
-    "llm_ann_ivf_pq" ->
+    },
+      // The whole IVF-PQ pipeline replayed: same micro dims, same PQ grid,
+      // same md5 centroids, same integer dots, same (qdot, id) top-3.
       s"""WITH e AS (SELECT vec_id,
         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000) AS BIGINT) AS xm,
         |    generate_subscripts(embedding, 1) - 1 AS pos
@@ -2291,10 +2056,44 @@ object LlmPrep extends Family {
         |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY probe_id
         |      ORDER BY qdot DESC, neighbor_id) AS BIGINT) AS rnk
         |  FROM q) WHERE rnk <= 3
-        |ORDER BY probe_id, rnk""".stripMargin,
+        |ORDER BY probe_id, rnk""".stripMargin),
 
-    // Same pair selection, same side-by-side length compare.
-    "llm_length_bias_audit" ->
+    // Length-bias audit over the preference pairs — RLHF's best-known
+    // failure mode (reward models prefer LONGER answers regardless of
+    // quality; a pair set where chosen systematically out-lengths
+    // rejected will train verbosity, not helpfulness): rebuilds the
+    // exact llm_preference_pairs selection, compares token lengths
+    // side-by-side, and grades the share of chosen-longer pairs in
+    // exact ppm with a both-tails verdict band [40%, 60%].
+    Op("llm_length_bias_audit", (s, d) => {
+      val t = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("source"),
+          size(split(col("text"), " ")).cast("bigint").as("toks"),
+          size(array_distinct(split(col("text"), " "))).cast("bigint").as("uniq"))
+        .withColumn("score", expr("(uniq * 1000) DIV toks"))
+      val wB = org.apache.spark.sql.expressions.Window
+        .partitionBy("lang", "source").orderBy(desc("score"), col("doc_id"))
+      val wW = org.apache.spark.sql.expressions.Window
+        .partitionBy("lang", "source").orderBy(col("score"), col("doc_id"))
+      val best = t.withColumn("rn", row_number().over(wB)).where(col("rn") === 1)
+        .select(col("lang"), col("source"), col("toks").as("chosen_toks"),
+          col("doc_id").as("chosen_id"))
+      val worst = t.withColumn("rn", row_number().over(wW)).where(col("rn") === 1)
+        .select(col("lang"), col("source"), col("toks").as("rejected_toks"),
+          col("doc_id").as("rejected_id"))
+      best.join(worst, Seq("lang", "source"))
+        .where(col("chosen_id") =!= col("rejected_id"))
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(when(col("chosen_toks") > col("rejected_toks"), 1L).otherwise(0L))
+            .as("n_chosen_longer"),
+          sum(when(col("chosen_toks") === col("rejected_toks"), 1L).otherwise(0L))
+            .as("n_ties"))
+        .withColumn("longer_ppm",
+          expr("(n_chosen_longer * 1000000) DIV (n_pairs - n_ties)"))
+        .withColumn("biased",
+          col("longer_ppm") > 600000L || col("longer_ppm") < 400000L)
+    },
+      // Same pair selection, same side-by-side length compare.
       """WITH t AS (SELECT doc_id, lang, source,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
         |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS uniq
@@ -2319,11 +2118,38 @@ object LlmPrep extends Family {
         |  (n_chosen_longer * 1000000) // (n_pairs - n_ties) AS longer_ppm,
         |  (n_chosen_longer * 1000000) // (n_pairs - n_ties) > 600000
         |    OR (n_chosen_longer * 1000000) // (n_pairs - n_ties) < 400000 AS biased
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
 
-    // The trace arithmetic replayed without JSON (the roundtrip is the
-    // Spark-side claim; the numbers are the shared md5 randomness).
-    "llm_tool_trace_audit" ->
+    // Tool-call trace audit — agentic training data's equivalent of the
+    // quality rollup: traces are AUTHORED as real JSON (to_json over
+    // typed structs), then parsed back through from_json + explode —
+    // the serialize→parse roundtrip IS the op (a schema drift or quoting
+    // bug breaks the rollup) — and audited per tool: call counts, error
+    // rates, latency totals, all from the shared md5 randomness so the
+    // oracle can replay arithmetically without JSON.
+    Op("llm_tool_trace_audit", (s, d) => {
+      val calls = (0 to 2).map { k =>
+        struct(
+          expr(s"CASE ${md5Bits(s"concat('tool:', CAST(doc_id AS STRING), ':$k')", 8)} % 3 WHEN 0 THEN 'code' WHEN 1 THEN 'fetch' ELSE 'search' END")
+            .as("tool"),
+          expr(s"IF(${md5Bits(s"concat('st:', CAST(doc_id AS STRING), ':$k')", 8)} % 5 = 0, 'error', 'ok')").as("status"),
+          expr(s"${md5Bits(s"concat('ms:', CAST(doc_id AS STRING), ':$k')", 8)} % 500").as("ms"))
+      }
+      Tables.documents(s, d).where(col("doc_id") % 15 === 0)
+        .select(col("doc_id"), to_json(array(calls: _*)).as("trace"))
+        .select(col("doc_id"),
+          from_json(col("trace"), org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.StructType.fromDDL(
+              "tool STRING, status STRING, ms BIGINT"))).as("calls"))
+        .select(explode(col("calls")).as("c"))
+        .groupBy(col("c.tool").as("tool"))
+        .agg(count(lit(1)).as("n_calls"),
+          sum(when(col("c.status") === "error", 1L).otherwise(0L)).as("n_errors"),
+          sum("c.ms").as("total_ms"))
+        .orderBy("tool")
+    },
+      // The trace arithmetic replayed without JSON (the roundtrip is the
+      // Spark-side claim; the numbers are the shared md5 randomness).
       s"""WITH k AS (SELECT unnest([0, 1, 2]) AS k),
         |c AS (SELECT doc_id, k.k,
         |    CASE ${duckMd5Bits("'tool:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)", 8)} % 3
@@ -2335,10 +2161,33 @@ object LlmPrep extends Family {
         |SELECT tool, CAST(COUNT(*) AS BIGINT) AS n_calls,
         |  CAST(SUM(CASE WHEN status = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
         |  CAST(SUM(ms) AS BIGINT) AS total_ms
-        |FROM c GROUP BY tool ORDER BY tool""".stripMargin,
+        |FROM c GROUP BY tool ORDER BY tool""".stripMargin),
 
-    // Same md5 coordinates, same (band, x, box) order, same checksum.
-    "mm_layout_reading_order" ->
+    // Layout reading order — the document-AI preprocessing step between
+    // OCR boxes and text assembly (a page's boxes must serialize
+    // row-major or the text scrambles): 12 synthetic boxes per sampled
+    // page with md5-integer coordinates, ordered by (row band = y DIV
+    // 140, x, box) — the standard XY-cut approximation — and graded as a
+    // per-page order checksum Σ box_id·rank (any transposition changes
+    // it). Pure window arithmetic; pages are independent at any scale.
+    Op("mm_layout_reading_order", (s, d) => {
+      val boxes = Tables.documents(s, d).where(col("doc_id") % 25 === 0)
+        .select(col("doc_id"), explode(expr("sequence(0, 11)")).as("box"))
+        .select(col("doc_id"), col("box"),
+          expr(s"${md5Bits("concat('x:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))", 8)} % 1000")
+            .as("x"),
+          expr(s"${md5Bits("concat('y:', CAST(doc_id AS STRING), ':', CAST(box AS STRING))", 8)} % 1400")
+            .as("y"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("doc_id").orderBy(expr("y DIV 140"), col("x"), col("box"))
+      boxes.withColumn("rank", row_number().over(w).cast("bigint"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_boxes"),
+          sum(col("box") * col("rank")).as("order_checksum"),
+          max(expr("y DIV 140")).as("max_band"))
+        .orderBy("doc_id")
+    },
+      // Same md5 coordinates, same (band, x, box) order, same checksum.
       s"""WITH pg AS (SELECT doc_id, unnest(range(0, 12)) AS box
         |  FROM documents WHERE doc_id % 25 = 0),
         |b AS (SELECT doc_id, box,
@@ -2351,10 +2200,40 @@ object LlmPrep extends Family {
         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_boxes,
         |  CAST(SUM(box * rnk) AS BIGINT) AS order_checksum,
         |  MAX(band) AS max_band
-        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM r GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // Identical partial/merge/full algebra; every sum exact.
-    "llm_mergeable_stats" ->
+    // Mergeable-statistics witness — the algebraic property EVERY
+    // distributed corpus-stats job leans on (partials from independent
+    // batches must merge to the full answer, or incremental pipelines
+    // silently drift): token-count moments computed per batch half, then
+    // MERGED (sums add, mins min, maxes max), graded side-by-side with
+    // the direct full-corpus pass — verdict column per statistic.
+    Op("llm_mergeable_stats", (s, d) => {
+      val t = Tables.documents(s, d)
+        .select(col("doc_id"),
+          size(split(col("text"), " ")).cast("bigint").as("tok"))
+        .withColumn("batch", col("doc_id") % 2)
+      val partials = t.groupBy("batch")
+        .agg(count(lit(1)).as("n"),
+          sum(col("tok").cast("decimal(38,0)")).cast("bigint").as("s"),
+          sum((col("tok") * col("tok")).cast("decimal(38,0)")).cast("bigint").as("q"),
+          min("tok").as("mn"), max("tok").as("mx"))
+      val merged = partials.agg(
+        sum("n").cast("bigint").as("m_n"), sum("s").cast("bigint").as("m_s"),
+        sum("q").cast("bigint").as("m_q"), min("mn").as("m_mn"), max("mx").as("m_mx"))
+      val full = t.agg(count(lit(1)).as("f_n"),
+        sum(col("tok").cast("decimal(38,0)")).cast("bigint").as("f_s"),
+        sum((col("tok") * col("tok")).cast("decimal(38,0)")).cast("bigint").as("f_q"),
+        min("tok").as("f_mn"), max("tok").as("f_mx"))
+      merged.crossJoin(full)
+        .select(col("m_n"), col("f_n"), col("m_s"), col("f_s"),
+          col("m_q"), col("f_q"), col("m_mn"), col("f_mn"),
+          col("m_mx"), col("f_mx"),
+          (col("m_n") === col("f_n") && col("m_s") === col("f_s") &&
+            col("m_q") === col("f_q") && col("m_mn") === col("f_mn") &&
+            col("m_mx") === col("f_mx")).as("merge_exact"))
+    },
+      // Identical partial/merge/full algebra; every sum exact.
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
         |    doc_id % 2 AS batch
@@ -2375,6 +2254,6 @@ object LlmPrep extends Family {
         |SELECT m_n, f_n, m_s, f_s, m_q, f_q, m_mn, f_mn, m_mx, f_mx,
         |  m_n = f_n AND m_s = f_s AND m_q = f_q AND m_mn = f_mn AND m_mx = f_mx
         |    AS merge_exact
-        |FROM m, f""".stripMargin
+        |FROM m, f""".stripMargin)
   )
 }

@@ -13,7 +13,7 @@ import graft.Tables
   */
 object Round11Ops extends Family {
 
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // Bucket PRUNING — the read-side payoff sink_bucketed's layout buys
     // (writing buckets is half the story; a point-lookup on the bucket
     // key must scan 1/16th of the files, and the plan SAYS so —
@@ -23,7 +23,7 @@ object Round11Ops extends Family {
     // what makes pruning kick in), rollup graded against the plain
     // parquet replay. At 100 TB this is the difference between one
     // bucket file and the whole table.
-    "warehouse_bucket_pruning" -> ((s, d) => {
+    Op("warehouse_bucket_pruning", (s, d) => {
       val tbl = "graft_bktp_" + d.replaceAll("[^A-Za-z0-9]", "_")
       if (!s.catalog.tableExists(tbl)) {
         Tables.orders(s, d).write.mode("overwrite")
@@ -42,7 +42,15 @@ object Round11Ops extends Family {
           col("n_orders"), col("cents"),
           col("min_key").cast("bigint").as("min_key"),
           col("max_key").cast("bigint").as("max_key"))
-    }),
+    },
+      // Same literal point-lookup replayed without the bucket layout.
+      """SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
+        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+        |  CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
+        |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key
+        |FROM orders WHERE o_custkey = (SELECT MIN(o_custkey) FROM orders)
+        |GROUP BY 1""".stripMargin),
 
     // SELECT * EXCEPT — the wide-table ergonomics surface (on a 400-
     // column training-features table, "everything but the blob columns"
@@ -51,14 +59,20 @@ object Round11Ops extends Family {
     // prune to the kept columns exactly as if they were spelled out —
     // the oracle IS the spelled-out form). Sampled row-level output
     // under the unique-orderkey total order.
-    "api_sql_star_except" -> ((s, d) => {
+    Op("api_sql_star_except", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("graft_sxe_orders")
       s.sql(
         """SELECT * EXCEPT (o_totalprice, o_orderdate)
           |FROM graft_sxe_orders
           |WHERE o_orderkey % 100 = 1
           |ORDER BY o_orderkey""".stripMargin)
-    }),
+    },
+      // The spelled-out form the star-except expansion must equal.
+      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
+        |  CAST(o_custkey AS BIGINT) AS o_custkey,
+        |  o_orderstatus, o_orderpriority
+        |FROM orders WHERE o_orderkey % 100 = 1
+        |ORDER BY o_orderkey""".stripMargin),
 
     // Clustering-depth audit — how INTERLEAVED a table's files are on
     // its sort key (the metric a lakehouse OPTIMIZE decision reads:
@@ -71,7 +85,7 @@ object Round11Ops extends Family {
     // (bounded by file count; the production form is a sweep over file
     // stats, same numbers). Oracle recomputes both layouts' bucket
     // min/max arithmetically from orders.
-    "warehouse_clustering_depth" -> ((s, d) => {
+    Op("warehouse_clustering_depth", (s, d) => {
       val dir = Scratch.staged("clusdepth", d) { dir =>
         val o = Tables.orders(s, d).select(col("o_orderkey"))
         val mx = o.agg(max("o_orderkey")).collect()(0).getLong(0)
@@ -104,7 +118,26 @@ object Round11Ops extends Family {
           max("depth_at_lo").as("max_depth"),
           sum("pairs_from_f").as("overlap_pairs"))
         .orderBy("layout")
-    }),
+    },
+      // Same two layouts recomputed arithmetically from orders.
+      """WITH mx AS (SELECT MAX(o_orderkey) AS mx FROM orders),
+        |modf AS (SELECT o_orderkey % 8 AS f,
+        |    CAST(MIN(o_orderkey) AS BIGINT) AS lo, CAST(MAX(o_orderkey) AS BIGINT) AS hi
+        |  FROM orders GROUP BY 1),
+        |rngf AS (SELECT LEAST(o_orderkey * 8 // (mx + 1), 7) AS f,
+        |    CAST(MIN(o_orderkey) AS BIGINT) AS lo, CAST(MAX(o_orderkey) AS BIGINT) AS hi
+        |  FROM orders CROSS JOIN mx GROUP BY 1),
+        |files AS (SELECT 'modulo' AS layout, f, lo, hi FROM modf
+        |  UNION ALL SELECT 'range', f, lo, hi FROM rngf),
+        |pf AS (SELECT a.layout, a.f,
+        |    CAST(SUM(CASE WHEN b.lo <= a.lo AND a.lo <= b.hi THEN 1 ELSE 0 END) AS BIGINT) AS depth_at_lo,
+        |    CAST(SUM(CASE WHEN a.f < b.f AND a.lo <= b.hi AND b.lo <= a.hi THEN 1 ELSE 0 END) AS BIGINT) AS pairs_from_f
+        |  FROM files a JOIN files b ON a.layout = b.layout
+        |  GROUP BY 1, 2)
+        |SELECT layout, CAST(COUNT(*) AS BIGINT) AS n_files,
+        |  CAST(MAX(depth_at_lo) AS BIGINT) AS max_depth,
+        |  CAST(SUM(pairs_from_f) AS BIGINT) AS overlap_pairs
+        |FROM pf GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // PR-AUC — the imbalanced-retrieval grade beside agg_auc_roc (ROC
     // flatters a 10%-positive problem; precision–recall does not):
@@ -113,7 +146,7 @@ object Round11Ops extends Family {
     // (per-term truncation declared) and the common recall denominator
     // P factored out until the final DIV. Verdict: beats the
     // positive-rate baseline 5×.
-    "agg_auc_pr" -> ((s, d) => {
+    Op("agg_auc_pr", (s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("truth", expr(s"IF(${md5Bits("apt", "doc_id", 8)} % 10 = 0, 1, 0)"))
         .withColumn("score", expr(s"${md5Bits("aps", "doc_id", 8)} % 700000 + truth * 300000"))
@@ -135,7 +168,29 @@ object Round11Ops extends Family {
         .withColumn("baseline_ppm", expr("p * 1000000 DIV n"))
         .withColumn("informative", expr("auc_pr_ppm > 5 * baseline_ppm"))
         .select("p", "n", "auc_pr_ppm", "baseline_ppm", "informative")
-    }),
+    },
+      // Same grid, same per-term precision truncation, same final DIV.
+      s"""WITH t AS (SELECT doc_id,
+        |    CASE WHEN ${duckMd5Bits("apt", "doc_id", 8)} % 10 = 0
+        |      THEN 1 ELSE 0 END AS truth
+        |  FROM documents),
+        |sc AS (SELECT truth,
+        |    ${duckMd5Bits("aps", "doc_id", 8)} % 700000
+        |      + truth * 300000 AS score FROM t),
+        |g AS (SELECT CAST(1000000 - v * 50000 AS BIGINT) AS thr FROM generate_series(1, 19) s(v)),
+        |cm AS (SELECT thr,
+        |    CAST(SUM(CASE WHEN truth = 1 AND score >= thr THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+        |    CAST(SUM(CASE WHEN truth = 0 AND score >= thr THEN 1 ELSE 0 END) AS BIGINT) AS fp
+        |  FROM sc CROSS JOIN g GROUP BY 1),
+        |st AS (SELECT *, COALESCE(LAG(tp, 1) OVER (ORDER BY thr DESC), 0) AS tp_prev FROM cm),
+        |c AS (SELECT CAST(SUM(CASE WHEN tp + fp > 0
+        |    THEN (tp - tp_prev) * tp * 1000000 // (tp + fp) ELSE 0 END) AS BIGINT) AS contrib_sum
+        |  FROM st),
+        |tot AS (SELECT CAST(SUM(truth) AS BIGINT) AS p, CAST(COUNT(*) AS BIGINT) AS n FROM t)
+        |SELECT p, n, contrib_sum // p AS auc_pr_ppm,
+        |  p * 1000000 // n AS baseline_ppm,
+        |  contrib_sum // p > 5 * (p * 1000000 // n) AS informative
+        |FROM c CROSS JOIN tot""".stripMargin),
 
     // Negative-binomial moment fit — WHAT overdispersed counts look
     // like as parameters (agg_dispersion_index flags the condition;
@@ -144,7 +199,7 @@ object Round11Ops extends Family {
     // r = m²/(v−m) and p = m/v cleared to the exact rationals
     // r = Sx²/(nΣx²−Sx²−n·Sx) and p = n·Sx/(nΣx²−Sx²) — two DIVs, the
     // v > m guard graded as its own boolean.
-    "agg_negbin_moments" -> ((s, d) => {
+    Op("agg_negbin_moments", (s, d) => {
       Tables.documents(s, d).select(col("doc_id"))
         .withColumn("g", expr(s"${md5Bits("nbg", "doc_id", 8)} % 3"))
         .withColumn("x", expr(s"${md5Bits("nbx", "doc_id", 8)} % (2 + 3 * g)"))
@@ -159,7 +214,22 @@ object Round11Ops extends Family {
         .withColumn("p_ppm", expr(
           "(CAST(n AS DECIMAL(38,0)) * sx * 1000000) DIV (CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx)").cast("long"))
         .select("n", "sx", "overdispersed", "r_milli", "p_ppm")
-    }),
+    },
+      // Same mixture plant, same cleared moment rationals.
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("nbg", "doc_id", 8)} % 3 AS g
+        |  FROM documents),
+        |v AS (SELECT ${duckMd5Bits("nbx", "doc_id", 8)} % (2 + 3 * g) AS x FROM t),
+        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx,
+        |    CAST(SUM(x * x) AS BIGINT) AS sxx FROM v)
+        |SELECT n, sx, n * sxx - sx * sx > n * sx AS overdispersed,
+        |  CAST(CASE WHEN n * sxx - sx * sx - n * sx > 0
+        |    THEN CAST(sx AS HUGEINT) * sx * 1000
+        |      // (CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx - CAST(n AS HUGEINT) * sx)
+        |    ELSE -1 END AS BIGINT) AS r_milli,
+        |  CAST((CAST(n AS HUGEINT) * sx * 1000000)
+        |    // (CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx) AS BIGINT) AS p_ppm
+        |FROM a""".stripMargin),
 
     // JSON-schema conformance audit — the structured-output gate every
     // tool-calling pipeline runs (the model SAID it returned
@@ -169,7 +239,7 @@ object Round11Ops extends Family {
     // semantics (malformed ⇒ null struct; missing-or-wrong-typed field ⇒
     // null field), which line up exactly with json_valid + TRY_CAST on the
     // oracle side. Per-class counts + ppm.
-    "llm_json_schema_validate" -> ((s, d) => {
+    Op("llm_json_schema_validate", (s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("conf", expr(s"${md5Bits("jsc", "doc_id", 8)} % 100"))
         .withColumn("resp", expr(
@@ -193,7 +263,35 @@ object Round11Ops extends Family {
           sum(when(col("valid"), 1L).otherwise(0L)).as("n_valid"))
         .withColumn("valid_ppm", expr("n_valid * 1000000 DIV n"))
         .select("n", "n_malformed", "n_conf_bad", "n_valid", "valid_ppm")
-    }),
+    },
+      // Same planted breakage, same json_valid + TRY_CAST classes.
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("jsc", "doc_id", 8)} % 100 AS conf
+        |  FROM documents),
+        |r AS (SELECT doc_id,
+        |    CASE
+        |      WHEN doc_id % 19 = 0 THEN '{"answer":"a","confidence":' || CAST(conf AS VARCHAR) || ',"sources":[1,2]'
+        |      WHEN doc_id % 13 = 0 THEN '{"answer":"a","sources":[1,2]}'
+        |      WHEN doc_id % 17 = 0 THEN '{"answer":"a","confidence":"high","sources":[1,2]}'
+        |      ELSE '{"answer":"a","confidence":' || CAST(conf AS VARCHAR) || ',"sources":[1,2]}'
+        |    END AS resp
+        |  FROM t),
+        |c AS (SELECT
+        |    CASE WHEN NOT json_valid(resp) THEN 1 ELSE 0 END AS malformed,
+        |    CASE WHEN json_valid(resp)
+        |      AND TRY_CAST(json_extract_string(resp, '$$.confidence') AS BIGINT) IS NULL
+        |      THEN 1 ELSE 0 END AS conf_bad,
+        |    CASE WHEN json_valid(resp)
+        |      AND TRY_CAST(json_extract_string(resp, '$$.confidence') AS BIGINT) IS NOT NULL
+        |      AND json_array_length(json_extract(resp, '$$.sources')) = 2
+        |      THEN 1 ELSE 0 END AS valid
+        |  FROM r)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(malformed) AS BIGINT) AS n_malformed,
+        |  CAST(SUM(conf_bad) AS BIGINT) AS n_conf_bad,
+        |  CAST(SUM(valid) AS BIGINT) AS n_valid,
+        |  CAST(SUM(valid) * 1000000 // COUNT(*) AS BIGINT) AS valid_ppm
+        |FROM c""".stripMargin),
 
     // Holm–Bonferroni — the step-down multiple-testing gate beside
     // agg_benjamini_hochberg's FDR one (Holm controls FWER — the bar a
@@ -201,7 +299,7 @@ object Round11Ops extends Family {
     // step-down over the 20-row rank window as a running AND (reject
     // while every smaller p passed p·(m−i+1) ≤ α·10⁶ — all integers),
     // plain Bonferroni emitted beside it to show what step-down buys.
-    "agg_holm_bonferroni" -> ((s, d) => {
+    Op("agg_holm_bonferroni", (s, d) => {
       val hyp = Tables.documents(s, d).where(col("doc_id") < 20)
         .select(col("doc_id").as("h"))
         .withColumn("p_ppm", expr(
@@ -215,14 +313,29 @@ object Round11Ops extends Family {
         .withColumn("bonf_rejected", expr("p_ppm * 20 <= 50000"))
         .select("h", "i", "p_ppm", "holm_rejected", "bonf_rejected")
         .orderBy("i")
-    }),
+    },
+      // Same step-down running AND over the 20-row rank order.
+      s"""WITH h AS (SELECT doc_id AS h FROM documents WHERE doc_id < 20),
+        |p AS (SELECT h,
+        |    CASE WHEN h < 5
+        |      THEN ${duckMd5Bits("hbp", "h", 8)} % 500
+        |      ELSE ${duckMd5Bits("hbq", "h", 8)} % 1000000
+        |    END AS p_ppm
+        |  FROM h),
+        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY p_ppm, h) AS BIGINT) AS i FROM p),
+        |s AS (SELECT *, CASE WHEN p_ppm * (20 - i + 1) <= 50000 THEN 1 ELSE 0 END AS pass FROM r),
+        |q AS (SELECT *, MIN(pass) OVER (ORDER BY p_ppm, h
+        |    ROWS UNBOUNDED PRECEDING) = 1 AS holm_rejected FROM s)
+        |SELECT h, i, p_ppm, holm_rejected,
+        |  p_ppm * 20 <= 50000 AS bonf_rejected
+        |FROM q ORDER BY i""".stripMargin),
 
     // Base36 roundtrip — the compact-id codec shard names and URL slugs
     // use: fixed-width 7-digit encode by unrolled DIV/MOD (36⁷ > 7·10¹⁰
     // covers every key), decode by alphabet position, and the roundtrip
     // identity GRADED per row — the decode must reproduce the key
     // exactly in both engines.
-    "fn_base36_roundtrip" -> ((s, d) => {
+    Op("fn_base36_roundtrip", (s, d) => {
       val alpha = "0123456789abcdefghijklmnopqrstuvwxyz"
       val enc = (0 to 6).reverse.map(i =>
         s"substring('$alpha', CAST(o_orderkey DIV ${math.pow(36, i).toLong} % 36 AS INT) + 1, 1)")
@@ -238,7 +351,19 @@ object Round11Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("o_orderkey"),
           col("b36"), col("decoded"), col("roundtrip_ok"))
         .orderBy("o_orderkey")
-    }),
+    },
+      // Same unrolled 7-digit codec, same graded identity.
+      ("""WITH e AS (SELECT o_orderkey,
+        |    """ + (0 to 6).reverse.map(i =>
+            s"substring('0123456789abcdefghijklmnopqrstuvwxyz', CAST(o_orderkey // ${math.pow(36, i).toLong} % 36 AS INT) + 1, 1)")
+            .mkString(" || ") + """ AS b36
+        |  FROM orders WHERE o_orderkey % 100 = 1),
+        |d AS (SELECT *, """ + (0 to 6).map(i =>
+            s"(CAST(instr('0123456789abcdefghijklmnopqrstuvwxyz', substring(b36, ${7 - i}, 1)) AS BIGINT) - 1) * ${math.pow(36, i).toLong}")
+            .mkString(" + ") + """ AS decoded FROM e)
+        |SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey, b36, decoded,
+        |  decoded = o_orderkey AS roundtrip_ok
+        |FROM d ORDER BY o_orderkey""").stripMargin),
 
     // Cochran–Armitage trend test — "does the rate RISE with dose?"
     // (agg_chisq asks association; ordered exposure groups deserve the
@@ -246,7 +371,7 @@ object Round11Ops extends Family {
     // ordered doses with integer scores w = 0..4, T = Σwᵢ(xᵢN − nᵢX)
     // exact, Var·N² = X(N−X)·(N·Σwᵢ²nᵢ − (Σwᵢnᵢ)²) exact, and the z²
     // verdict fully cross-multiplied T²·N·10⁴·... — no float anywhere.
-    "agg_cochran_armitage" -> ((s, d) => {
+    Op("agg_cochran_armitage", (s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("dose", expr(s"${md5Bits("cad", "doc_id", 8)} % 5"))
         .withColumn("conv", expr(s"IF(${md5Bits("cac", "doc_id", 8)} % 100 < 25 + 5 * dose, 1, 0)"))
@@ -264,7 +389,27 @@ object Round11Ops extends Family {
              > CAST(3841600 AS DECIMAL(38,0)) * var_n3"""))
         .select(col("nn"), col("xx"), col("t_num"),
           col("var_n3").cast("long").as("var_n3"), col("significant"))
-    }),
+    },
+      // Same integer trend statistic, same cross-multiplied z².
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("cad", "doc_id", 8)} % 5 AS dose
+        |  FROM documents),
+        |c AS (SELECT dose,
+        |    CASE WHEN ${duckMd5Bits("cac", "doc_id", 8)} % 100
+        |      < 25 + 5 * dose THEN 1 ELSE 0 END AS conv
+        |  FROM t),
+        |g AS (SELECT dose, CAST(COUNT(*) AS BIGINT) AS ni, CAST(SUM(conv) AS BIGINT) AS xi
+        |  FROM c GROUP BY 1),
+        |a AS (SELECT CAST(SUM(ni) AS BIGINT) AS nn, CAST(SUM(xi) AS BIGINT) AS xx,
+        |    CAST(SUM(dose * xi) AS BIGINT) AS swx, CAST(SUM(dose * ni) AS BIGINT) AS swn,
+        |    CAST(SUM(dose * dose * ni) AS BIGINT) AS sw2n FROM g)
+        |SELECT nn, xx, swx * nn - swn * xx AS t_num,
+        |  CAST(CAST(xx AS HUGEINT) * (nn - xx)
+        |    * (CAST(nn AS HUGEINT) * sw2n - CAST(swn AS HUGEINT) * swn) AS BIGINT) AS var_n3,
+        |  CAST(swx * nn - swn * xx AS HUGEINT) * (swx * nn - swn * xx) * nn * 1000000
+        |    > CAST(3841600 AS HUGEINT) * (CAST(xx AS HUGEINT) * (nn - xx)
+        |      * (CAST(nn AS HUGEINT) * sw2n - CAST(swn AS HUGEINT) * swn)) AS significant
+        |FROM a""".stripMargin),
 
     // Page–Hinkley — the SEQUENTIAL drift alarm (agg_ks_drift compares
     // two finished samples; PH watches a STREAM and fires mid-flight):
@@ -275,7 +420,7 @@ object Round11Ops extends Family {
     // running-window passes on one partitioned sort; ledger = first
     // alarm position fraction + alarm count, and the alarm must land
     // AFTER the shift point.
-    "win_page_hinkley" -> ((s, d) => {
+    Op("win_page_hinkley", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"))
@@ -297,7 +442,30 @@ object Round11Ops extends Family {
         .select("event_type", "n", "n_alarms", "first_alarm_rn",
           "first_alarm_pct", "fired_after_shift")
         .orderBy("event_type")
-    }),
+    },
+      // Same fixed-reference PH recursion-free form, same planted shift.
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_t,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY epoch_us(ts), event_id) AS BIGINT) AS rn
+        |  FROM events),
+        |x AS (SELECT *, 500 + ${duckMd5Bits("phn", "event_id", 8)} % 41 - 20
+        |    + CASE WHEN rn * 10 > n_t * 6 THEN 80 ELSE 0 END AS x
+        |  FROM e),
+        |m AS (SELECT *, CAST(SUM(x - 500 - 5) OVER w AS BIGINT) AS m_t
+        |  FROM x WINDOW w AS (PARTITION BY event_type ORDER BY ts_us, event_id
+        |    ROWS UNBOUNDED PRECEDING)),
+        |mm AS (SELECT *, CAST(MIN(m_t) OVER (PARTITION BY event_type ORDER BY ts_us, event_id
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS m_min FROM m),
+        |al AS (SELECT *, m_t - m_min > 2000 AS alarm FROM mm),
+        |g AS (SELECT event_type, CAST(MAX(n_t) AS BIGINT) AS n,
+        |    CAST(SUM(CASE WHEN alarm THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
+        |    CAST(MIN(CASE WHEN alarm THEN rn END) AS BIGINT) AS first_alarm_rn
+        |  FROM al GROUP BY 1)
+        |SELECT event_type, n, n_alarms, first_alarm_rn,
+        |  first_alarm_rn * 100 // n AS first_alarm_pct,
+        |  first_alarm_rn * 10 > n * 6 AS fired_after_shift
+        |FROM g ORDER BY event_type""".stripMargin),
 
     // Matryoshka truncation recall — what 16 of 64 dims COST (MRL
     // embeddings promise graceful truncation; this measures it): both
@@ -307,7 +475,7 @@ object Round11Ops extends Family {
     // order, full-dim vs 16-dim prefix, recall@1 = agreement rate. The
     // dims explode into a (vec, idx, q) frame joined on idx — the shape
     // that scales as n·d, never materializing a matrix.
-    "llm_matryoshka_recall" -> ((s, d) => {
+    Op("llm_matryoshka_recall", (s, d) => {
       val dims = Tables.embeddings(s, d)
         .select(col("vec_id"), posexplode(col("embedding")))
         .select(col("vec_id"), col("pos").cast("bigint").as("idx"),
@@ -332,7 +500,27 @@ object Round11Ops extends Family {
           sum(when(col("full_top1") === col("trunc_top1"), 1L).otherwise(0L)).as("n_match"))
         .withColumn("recall1_ppm", expr("n_match * 1000000 DIV n_probes"))
         .select("n_probes", "n_match", "recall1_ppm")
-    }),
+    },
+      // Same milli quantization, same (dot DESC, cand ASC) total order.
+      """WITH dims AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx,
+        |    CAST(FLOOR(embedding[i] * 1000) AS BIGINT) AS q
+        |  FROM embeddings, generate_series(1, 64) t(i)),
+        |dots AS (SELECT w AS width, p.vec_id AS probe, c.vec_id AS cand,
+        |    CAST(SUM(p.q * c.q) AS BIGINT) AS dot
+        |  FROM dims p JOIN dims c ON p.idx = c.idx
+        |  CROSS JOIN (SELECT UNNEST([16, 64]) AS w) wt
+        |  WHERE p.vec_id < 10 AND p.vec_id <> c.vec_id AND p.idx < w AND c.idx < w
+        |  GROUP BY 1, 2, 3),
+        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY width, probe
+        |    ORDER BY dot DESC, cand) AS rk FROM dots),
+        |t1 AS (SELECT probe,
+        |    MAX(CASE WHEN width = 64 THEN cand END) AS full_top1,
+        |    MAX(CASE WHEN width = 16 THEN cand END) AS trunc_top1
+        |  FROM r WHERE rk = 1 GROUP BY 1)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
+        |  CAST(SUM(CASE WHEN full_top1 = trunc_top1 THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
+        |  CAST(SUM(CASE WHEN full_top1 = trunc_top1 THEN 1 ELSE 0 END) * 1000000 // COUNT(*) AS BIGINT) AS recall1_ppm
+        |FROM t1""".stripMargin),
 
     // Coreness (full shell decomposition) — graph_kcore answers "who
     // survives k=6?"; coreness labels EVERY node with its maximal k.
@@ -345,7 +533,7 @@ object Round11Ops extends Family {
     // envelope) — and at scale the h-index superstep is exactly how
     // coreness ships on Pregel-style systems. Oracle replays the same
     // six rounds as generated CTEs; ScalaTest pins c ≥ 6 ≡ graph_kcore.
-    "graph_coreness" -> ((s, d) => {
+    Op("graph_coreness", (s, d) => {
       val base = GraphOps.backboneForCoreness(s, d)
       val bi = base.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
         .unionAll(base.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
@@ -365,6 +553,25 @@ object Round11Ops extends Family {
           .localCheckpoint()
       }
       core.select(col("node"), col("c").as("coreness")).orderBy("node")
+    },
+      // Same six h-index rounds replayed as generated chained CTEs.
+      {
+      val rounds = (1 to 6).map { t =>
+        val prev = if (t == 1) "c0" else s"c${t - 1}"
+        s"""n$t AS (SELECT bi.src AS node, p.c AS nc
+           |  FROM bi JOIN $prev p ON p.node = bi.dst),
+           |r$t AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY node
+           |    ORDER BY nc DESC) AS BIGINT) AS rn FROM n$t),
+           |c$t AS MATERIALIZED (SELECT node, CAST(MAX(LEAST(rn, nc)) AS BIGINT) AS c
+           |  FROM r$t GROUP BY 1)"""
+      }.mkString(",\n")
+      s"""WITH ${GraphOps.coreOracleCtes},
+         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
+         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |c0 AS MATERIALIZED (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS c
+         |  FROM bi GROUP BY 1),
+         |$rounds
+         |SELECT node, c AS coreness FROM c6 ORDER BY node""".stripMargin
     }),
 
     // unionByName with missing columns — the schema-drift append every
@@ -372,7 +579,7 @@ object Round11Ops extends Family {
     // must union in with NULLs, BY NAME, never by position): two
     // projections of orders with different column sets, allowMissing
     // fills the gaps; the oracle is the explicit NULL-padded UNION.
-    "api_union_missing_cols" -> ((s, d) => {
+    Op("api_union_missing_cols", (s, d) => {
       val v1 = Tables.orders(s, d).where(col("o_orderkey") % 200 === 1)
         .select(col("o_orderkey"), col("o_orderstatus"))
       val v2 = Tables.orders(s, d).where(col("o_orderkey") % 200 === 2)
@@ -382,14 +589,23 @@ object Round11Ops extends Family {
         .select(col("o_orderkey").cast("bigint").as("o_orderkey"),
           col("o_orderstatus"), col("cents"))
         .orderBy("o_orderkey")
-    }),
+    },
+      // The explicit NULL-padded form the by-name union must equal.
+      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey, o_orderstatus,
+        |  CAST(NULL AS BIGINT) AS cents
+        |FROM orders WHERE o_orderkey % 200 = 1
+        |UNION ALL
+        |SELECT CAST(o_orderkey AS BIGINT), o_orderstatus,
+        |  CAST(FLOOR(o_totalprice * 100) AS BIGINT)
+        |FROM orders WHERE o_orderkey % 200 = 2
+        |ORDER BY o_orderkey""".stripMargin),
 
     // Bit-packing roundtrip — eight 8-bit fields in one BIGINT (the
     // feature-store trick that turns 8 columns into 1): pack by shifts
     // (exact powers of two — multiplication, no float), unpack by
     // DIV/MOD, every field's roundtrip GRADED; byte 7 kept < 128 so the
     // packed value stays in signed int64.
-    "fn_bitpack_roundtrip" -> ((s, d) => {
+    Op("fn_bitpack_roundtrip", (s, d) => {
       val fields = (0 to 7).map(i =>
         expr(s"${md5Bits(s"bp$i", "event_id", 8)} % ${if (i == 7) 128 else 256}").as(s"f$i"))
       val pack = (0 to 7).map(i => s"f$i * ${1L << (8 * i)}").mkString(" + ")
@@ -405,7 +621,17 @@ object Round11Ops extends Family {
         .withColumn("roundtrip_ok", expr(ok))
         .select("event_id", "packed", "f0", "f7", "roundtrip_ok")
         .orderBy("event_id")
-    }),
+    },
+      // Same shift pack, same DIV/MOD unpack, same graded identity.
+      ("""WITH f AS (SELECT event_id, """ + (0 to 7).map(i =>
+          s"${duckMd5Bits(s"bp$i", "event_id", 8)} % ${if (i == 7) 128 else 256} AS f$i")
+          .mkString(", ") + """
+        |  FROM events WHERE event_id % 50 = 3),
+        |p AS (SELECT *, """ + (0 to 7).map(i => s"f$i * ${1L << (8 * i)}").mkString(" + ") + """ AS packed FROM f)
+        |SELECT event_id, packed, f0, f7,
+        |  """ + (0 to 7).map(i =>
+          s"packed // ${1L << (8 * i)} % ${if (i == 7) 128 else 256} = f$i").mkString(" AND ") + """ AS roundtrip_ok
+        |FROM p ORDER BY event_id""").stripMargin),
 
     // 2³ factorial effects — the DOE contrast table (ab_ttest measures
     // one factor; an experiment with three knobs wants main effects AND
@@ -414,7 +640,7 @@ object Round11Ops extends Family {
     // milli DIVs, main effects as 4-pair contrast averages, the AB
     // interaction as the difference-of-differences; the dead factor C
     // must read ≈ 0.
-    "agg_factorial_effects" -> ((s, d) => {
+    Op("agg_factorial_effects", (s, d) => {
       val t = Tables.documents(s, d).select(col("doc_id"))
         .withColumn("a", expr(s"${md5Bits("fea", "doc_id", 8)} % 2"))
         .withColumn("b", expr(s"${md5Bits("feb", "doc_id", 8)} % 2"))
@@ -442,7 +668,32 @@ object Round11Ops extends Family {
           "CASE WHEN cab >= 0 THEN cab DIV 4 ELSE -((0 - cab) DIV 4) END"))
         .select("n_total", "effect_a_milli", "effect_b_milli",
           "effect_c_milli", "effect_ab_milli")
-    }),
+    },
+      // Same unweighted cell means, same ±contrasts ÷ 4.
+      s"""WITH t AS (SELECT doc_id,
+        |    ${duckMd5Bits("fea", "doc_id", 8)} % 2 AS a,
+        |    ${duckMd5Bits("feb", "doc_id", 8)} % 2 AS b,
+        |    ${duckMd5Bits("fec", "doc_id", 8)} % 2 AS c,
+        |    ${duckMd5Bits("fen", "doc_id", 8)} % 21 - 10 AS e
+        |  FROM documents),
+        |y AS (SELECT a, b, c, 100 + 20 * a + 10 * b + 15 * a * b + e AS y FROM t),
+        |cells AS (SELECT a, b, c, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS sy
+        |  FROM y GROUP BY 1, 2, 3),
+        |m AS (SELECT *, CASE WHEN sy >= 0 THEN sy * 1000 // n
+        |    ELSE -((0 - sy) * 1000 // n) END AS m_milli FROM cells),
+        |ct AS (SELECT
+        |    CAST(SUM(CASE WHEN a = 1 THEN m_milli ELSE -m_milli END) AS BIGINT) AS ca,
+        |    CAST(SUM(CASE WHEN b = 1 THEN m_milli ELSE -m_milli END) AS BIGINT) AS cb,
+        |    CAST(SUM(CASE WHEN c = 1 THEN m_milli ELSE -m_milli END) AS BIGINT) AS cc,
+        |    CAST(SUM(CASE WHEN a = b THEN m_milli ELSE -m_milli END) AS BIGINT) AS cab,
+        |    CAST(SUM(n) AS BIGINT) AS n_total
+        |  FROM m)
+        |SELECT n_total,
+        |  CASE WHEN ca >= 0 THEN ca // 4 ELSE -((0 - ca) // 4) END AS effect_a_milli,
+        |  CASE WHEN cb >= 0 THEN cb // 4 ELSE -((0 - cb) // 4) END AS effect_b_milli,
+        |  CASE WHEN cc >= 0 THEN cc // 4 ELSE -((0 - cc) // 4) END AS effect_c_milli,
+        |  CASE WHEN cab >= 0 THEN cab // 4 ELSE -((0 - cab) // 4) END AS effect_ab_milli
+        |FROM ct""".stripMargin),
 
     // Interrupted time series — the policy-change regression (was the
     // intervention a LEVEL jump, a SLOPE change, or both?): planted
@@ -451,7 +702,7 @@ object Round11Ops extends Family {
     // each intercept IS the level at the intervention — the jump is
     // their difference), slopes and intercepts as sign-safe milli DIVs
     // (the division law), per type.
-    "agg_its_segmented" -> ((s, d) => {
+    Op("agg_its_segmented", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
       val base = Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"))
@@ -493,378 +744,8 @@ object Round11Ops extends Family {
         .select("event_type", "slope_pre_milli", "slope_post_milli",
           "level_pre_milli", "level_post_milli", "jump_milli")
         .orderBy("event_type")
-    }),
-
-    // Momentum / rate-of-change — the percent-change oscillator beside
-    // win_rsi's bounded one: ROC = (x_t − x_{t−12})/x_{t−12} as a
-    // sign-safe milli DIV (cents are positive, so the denominator is
-    // safe; the numerator takes the magnitude-negate law), one
-    // partitioned sort, sampled ledger with the overbought/oversold
-    // ±80-milli flags.
-    "win_momentum_roc" -> ((s, d) => {
-      val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("prev", lag("cents", 12).over(ord))
-        .where(col("prev").isNotNull && col("prev") > 0 && col("event_id") % 9 === 4)
-        .withColumn("roc_milli", expr(
-          """CASE WHEN cents - prev >= 0
-             THEN (cents - prev) * 1000 DIV prev
-             ELSE -((prev - cents) * 1000 DIV prev) END"""))
-        .withColumn("signal", expr(
-          """CASE WHEN roc_milli > 80 THEN 'overbought'
-             WHEN roc_milli < -80 THEN 'oversold' ELSE 'neutral' END"""))
-        .select("event_type", "event_id", "cents", "prev", "roc_milli", "signal")
-        .orderBy("event_type", "event_id")
-    }),
-
-    // Benford MAD conformity — the auditor's number (agg_benford asks
-    // "does it deviate?"; Nigrini's MAD bands say HOW MUCH): the nine
-    // Benford ppm masses as shared integer LITERALS (the
-    // transcendental-on-literals law — log10(1+1/d) never evaluates at
-    // runtime), two planted populations from the SAME hash stream —
-    // uniform values (first digits nowhere near Benford) and exact
-    // powers of two (whose leading digits famously track Benford) —
-    // MAD = Σ|p̂_d − benford_d| DIV 9 in exact ppm; the uniform
-    // population must fail conformity and sit far above the 2^k one.
-    "agg_benford_mad" -> ((s, d) => {
-      val benford = Map(1 -> 301030L, 2 -> 176091L, 3 -> 124939L,
-        4 -> 96910L, 5 -> 79181L, 6 -> 66947L, 7 -> 57992L, 8 -> 51153L,
-        9 -> 45757L)
-      val bCase = (1 to 9).map(dd => s"WHEN d = $dd THEN ${benford(dd)}")
-        .mkString("CASE ", " ", " ELSE 0 END")
-      def firstDigit(xExpr: String, label: String) =
-        Tables.documents(s, d).select(col("doc_id"))
-          .withColumn("x", expr(xExpr))
-          .withColumn("d", expr("CAST(substring(CAST(x AS STRING), 1, 1) AS BIGINT)"))
-          .groupBy("d").agg(count(lit(1)).as("c"))
-          .withColumn("series", lit(label))
-      val uni = firstDigit(s"${md5Bits("bfu", "doc_id", 8)} % 99000 + 1000", "uniform")
-      val pow = firstDigit(
-        s"shiftleft(CAST(1 AS BIGINT), CAST(${md5Bits("bfp", "doc_id", 8)} % 30 AS INT))", "pow2")
-      uni.unionByName(pow)
-        .withColumn("n", sum("c").over(Window.partitionBy("series")))
-        .withColumn("gap", expr(s"abs(c * 1000000 DIV n - ($bCase))"))
-        .groupBy("series")
-        .agg(max("n").as("n"), count(lit(1)).as("n_digits"),
-          expr("sum(gap) DIV 9").as("mad_ppm"))
-        .withColumn("conforms", col("mad_ppm") < 15000L)
-        .orderBy("series")
-    }),
-
-    // OEE — overall equipment effectiveness, the manufacturing KPI that
-    // multiplies three ratios (availability × performance × quality);
-    // each planted ratio is an exact count fraction, each stage one
-    // declared ppm DIV, and the product re-truncates through ppm² —
-    // both engines replay the identical truncation chain, and the world
-    //-class ≥ 85% verdict is graded on the final ppm.
-    "agg_oee" -> ((s, d) => {
-      Tables.events(s, d).select(col("event_id"), col("event_type"))
-        .withColumn("scheduled", lit(1L))
-        .withColumn("running", expr(s"IF(${md5Bits("oea", "event_id", 8)} % 100 < 92, 1, 0)"))
-        .withColumn("at_speed", expr(
-          s"IF(running = 1 AND ${md5Bits("oep", "event_id", 8)} % 100 < 96, 1, 0)"))
-        .withColumn("good", expr(
-          s"IF(at_speed = 1 AND ${md5Bits("oeq", "event_id", 8)} % 100 < 97, 1, 0)"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum("running").as("run_units"),
-          sum("at_speed").as("speed_units"),
-          sum("good").as("good_units"))
-        .withColumn("availability_ppm", expr("run_units * 1000000 DIV n"))
-        .withColumn("performance_ppm", expr("speed_units * 1000000 DIV run_units"))
-        .withColumn("quality_ppm", expr("good_units * 1000000 DIV speed_units"))
-        .withColumn("oee_ppm", expr(
-          """availability_ppm * performance_ppm DIV 1000000
-             * quality_ppm DIV 1000000"""))
-        .withColumn("world_class", col("oee_ppm") >= 850000L)
-        .select("event_type", "n", "availability_ppm", "performance_ppm",
-          "quality_ppm", "oee_ppm", "world_class")
-        .orderBy("event_type")
-    }),
-
-    // MTBF / MTTR — the reliability pair read off an event log (uptime
-    // between failures, downtime to repair): planted ~2% failure marks
-    // on the per-type time axis, inter-failure gaps in exact
-    // microseconds via lag over failure events only, MTBF = Σgap DIV
-    // (k−1) and the failure-rate ppm beside it — the shape every SRE
-    // error-budget review reads.
-    "win_mtbf" -> ((s, d) => {
-      val fails = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"))
-        .where(expr(s"${md5Bits("mtf", "event_id", 8)} % 50 = 0"))
-      val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
-      val gaps = fails
-        .withColumn("prev_ts", lag("ts_us", 1).over(ord))
-        .where(col("prev_ts").isNotNull)
-        .withColumn("gap_us", col("ts_us") - col("prev_ts"))
-      val totals = Tables.events(s, d).groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"))
-      gaps.groupBy("event_type")
-        .agg(count(lit(1)).as("n_gaps"),
-          sum("gap_us").as("uptime_us"),
-          max("gap_us").as("max_gap_us"))
-        .withColumn("mtbf_us", expr(
-          "CASE WHEN uptime_us >= 0 THEN uptime_us DIV n_gaps ELSE 0 END"))
-        .join(totals, "event_type")
-        .withColumn("failure_rate_ppm", expr("(n_gaps + 1) * 1000000 DIV n_events"))
-        .select("event_type", "n_events", "n_gaps", "mtbf_us",
-          "max_gap_us", "failure_rate_ppm")
-        .orderBy("event_type")
-    }),
-
-    // Record highs — the H_n law (in any exchangeable tie-free sequence
-    // the expected number of running records is the harmonic number —
-    // position, not values, drives it): per-type md5 shuffle order with
-    // an INDEPENDENT-namespace tie-break key (order and value sharing a
-    // hash would break exchangeability), records by a running strict
-    // max, E in exact micro as Σ 10⁶ DIV i over a broadcast range, and
-    // the 3σ sanity verdict cross-multiplied with Var ≈ H_n.
-    "win_record_highs" -> ((s, d) => {
-      val ord = Window.partitionBy("event_type").orderBy(col("ok"))
-      val recs = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .withColumn("ok", expr(md5Bits("ro", "event_id", 8)))
-        // 2^33 span keeps the composite collision-free and cents-major
-        .withColumn("x", expr(s"cents * 8589934592 + ${md5Bits("rv", "event_id", 8)}"))
-        .withColumn("rm", max("x").over(ord.rowsBetween(Window.unboundedPreceding, -1)))
-        .withColumn("is_record", col("rm").isNull || col("x") > col("rm"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("is_record"), 1L).otherwise(0L)).as("records"))
-      val maxN = recs.agg(max("n")).collect()(0).getLong(0)
-      val harmonics = recs.select("event_type", "n")
-        .join(s.range(1, maxN + 1).select(col("id").as("i")), col("i") <= col("n"))
-        .groupBy("event_type")
-        .agg(sum(expr("1000000 DIV i")).as("e_micro"))
-      recs.join(harmonics, "event_type")
-        .withColumn("within_3sigma", expr(
-          """CAST(records * 1000000 - e_micro AS DECIMAL(38,0))
-             * (records * 1000000 - e_micro)
-             < CAST(9 AS DECIMAL(38,0)) * e_micro * 1000000"""))
-        .select("event_type", "n", "records", "e_micro", "within_3sigma")
-        .orderBy("event_type")
-    }),
-
-    // Volume profile — WHERE the volume traded, not when (win_vwap
-    // averages over time; the profile histograms over PRICE): md5
-    // volumes into 100-cent price buckets, POC = the modal bucket
-    // (volume desc, bucket asc — total order), and the value area as
-    // the volume-ranked 70% variant (take buckets by volume rank while
-    // the cumulative volume BEFORE the bucket is under 7·total/10 —
-    // fully cleared, no percentage ever materializes). The rank window
-    // runs over price buckets per type — bounded by the price range,
-    // not by n.
-    "win_volume_profile" -> ((s, d) => {
-      val buckets = Tables.events(s, d)
-        .select(col("event_type"),
-          expr("CAST(FLOOR(value * 100) AS BIGINT) DIV 100").as("pb"),
-          expr(s"${md5Bits("vpv", "event_id", 8)} % 100 + 1").as("vol"))
-        .groupBy("event_type", "pb")
-        .agg(sum("vol").as("v"))
-      val wRank = Window.partitionBy("event_type").orderBy(col("v").desc, col("pb"))
-      buckets
-        .withColumn("rk", row_number().over(wRank).cast("bigint"))
-        .withColumn("cum_before", coalesce(sum("v").over(
-          wRank.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("tot", sum("v").over(Window.partitionBy("event_type")))
-        .withColumn("in_va", expr("10 * cum_before < 7 * tot"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_buckets"),
-          max(when(col("rk") === 1, col("pb"))).as("poc_pb"),
-          sum(when(col("in_va"), 1L).otherwise(0L)).as("va_buckets"),
-          sum(when(col("in_va"), col("v")).otherwise(0L)).as("va_vol"),
-          max("tot").as("tot_vol"))
-        .orderBy("event_type")
-    }),
-
-    // Recall@k curve — the retrieval eval beside llm_retrieval_mrr's
-    // single number (capacity planning reads the CURVE: how much does
-    // k=10 buy over k=5?): every 7th doc is a query with 3 planted
-    // relevant candidates among 20, scores = md5 + a +300 relevance
-    // bonus (so ranking is good but imperfect), per-query 20-row rank
-    // window, recall@{1,5,10} macro-averaged in exact ppm; the curve
-    // must be monotone by construction of nested top-k sets.
-    "llm_recall_at_k" -> ((s, d) => {
-      val qs = Tables.documents(s, d).where(col("doc_id") % 7 === 0)
-        .select(col("doc_id").as("q"))
-      val cand = qs.crossJoin(broadcast(s.range(0, 20).select(col("id").as("k"))))
-        .withColumn("relevant", expr("IF(k < 3, 1, 0)"))
-        .withColumn("score", expr(
-          s"${md5Bits("concat('rak:', CAST(q AS STRING), ':', CAST(k AS STRING))", 8)} % 1000 + relevant * 300"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("q").orderBy(col("score").desc, col("k"))).cast("bigint"))
-      cand.agg(countDistinct("q").as("nq"),
-          sum(when(col("rk") <= 1, col("relevant")).otherwise(0L)).as("hit1"),
-          sum(when(col("rk") <= 5, col("relevant")).otherwise(0L)).as("hit5"),
-          sum(when(col("rk") <= 10, col("relevant")).otherwise(0L)).as("hit10"))
-        .withColumn("recall1_ppm", expr("hit1 * 1000000 DIV (3 * nq)"))
-        .withColumn("recall5_ppm", expr("hit5 * 1000000 DIV (3 * nq)"))
-        .withColumn("recall10_ppm", expr("hit10 * 1000000 DIV (3 * nq)"))
-        .select("nq", "hit1", "hit5", "hit10",
-          "recall1_ppm", "recall5_ppm", "recall10_ppm")
-    }),
-
-    // Dispersion index — overdispersion vs the Poisson/equi baseline
-    // (count data whose variance outruns its mean breaks every Poisson
-    // assumption downstream): the SAME mean-5 plant built two ways — a
-    // flat uniform (D = 2, overdispersed) and a sum-of-two-dice shape
-    // (D ≈ 1.17) — D = (nΣx²−Sx²)/((n−1)·Sx) exact milli, the D > 3/2
-    // verdict fully cross-multiplied 2(nΣx²−Sx²) > 3(n−1)Sx.
-    "agg_dispersion_index" -> ((s, d) => {
-      def series(xExpr: String, label: String) =
-        Tables.documents(s, d).select(col("doc_id"))
-          .withColumn("x", expr(xExpr))
-          .agg(count(lit(1)).as("n"), sum("x").as("sx"),
-            sum(expr("x * x")).as("sxx"))
-          .withColumn("series", lit(label))
-      series(s"${md5Bits("dia", "doc_id", 8)} % 11", "uniform")
-        .unionByName(series(s"${md5Bits("dib", "doc_id", 8)} % 6 + ${md5Bits("dic", "doc_id", 8)} % 6", "two_dice"))
-        .withColumn("d_milli", expr(
-          "(n * sxx - sx * sx) * 1000 DIV ((n - 1) * sx)"))
-        .withColumn("overdispersed", expr(
-          "2 * (n * sxx - sx * sx) > 3 * (n - 1) * sx"))
-        .select("series", "n", "sx", "d_milli", "overdispersed")
-        .orderBy("series")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Same literal point-lookup replayed without the bucket layout.
-    "warehouse_bucket_pruning" ->
-      """SELECT CAST(o_custkey AS BIGINT) AS o_custkey,
-        |  CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
-        |  CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
-        |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key
-        |FROM orders WHERE o_custkey = (SELECT MIN(o_custkey) FROM orders)
-        |GROUP BY 1""".stripMargin,
-
-    // The spelled-out form the star-except expansion must equal.
-    "api_sql_star_except" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
-        |  CAST(o_custkey AS BIGINT) AS o_custkey,
-        |  o_orderstatus, o_orderpriority
-        |FROM orders WHERE o_orderkey % 100 = 1
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // Same three planted ratios, same ppm truncation chain.
-    "agg_oee" ->
-      s"""WITH t AS (SELECT event_type, event_id,
-        |    CASE WHEN ${duckMd5Bits("oea", "event_id", 8)} % 100 < 92
-        |      THEN 1 ELSE 0 END AS running
-        |  FROM events),
-        |v AS (SELECT event_type, running,
-        |    CASE WHEN running = 1 AND ${duckMd5Bits("oep", "event_id", 8)} % 100 < 96
-        |      THEN 1 ELSE 0 END AS at_speed,
-        |    event_id
-        |  FROM t),
-        |w AS (SELECT event_type, running, at_speed,
-        |    CASE WHEN at_speed = 1 AND ${duckMd5Bits("oeq", "event_id", 8)} % 100 < 97
-        |      THEN 1 ELSE 0 END AS good
-        |  FROM v),
-        |g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(running) AS BIGINT) AS run_units,
-        |    CAST(SUM(at_speed) AS BIGINT) AS speed_units,
-        |    CAST(SUM(good) AS BIGINT) AS good_units
-        |  FROM w GROUP BY 1),
-        |p AS (SELECT *, run_units * 1000000 // n AS availability_ppm,
-        |    speed_units * 1000000 // run_units AS performance_ppm,
-        |    good_units * 1000000 // speed_units AS quality_ppm FROM g)
-        |SELECT event_type, n, availability_ppm, performance_ppm, quality_ppm,
-        |  availability_ppm * performance_ppm // 1000000 * quality_ppm // 1000000 AS oee_ppm,
-        |  availability_ppm * performance_ppm // 1000000 * quality_ppm // 1000000 >= 850000 AS world_class
-        |FROM p ORDER BY event_type""".stripMargin,
-
-    // Same ~2% failure marks, same inter-failure gap arithmetic.
-    "win_mtbf" ->
-      s"""WITH f AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us
-        |  FROM events
-        |  WHERE ${duckMd5Bits("mtf", "event_id", 8)} % 50 = 0),
-        |l AS (SELECT *, LAG(ts_us, 1) OVER (PARTITION BY event_type
-        |    ORDER BY ts_us, event_id) AS prev_ts FROM f),
-        |g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_gaps,
-        |    CAST(SUM(ts_us - prev_ts) AS BIGINT) AS uptime_us,
-        |    CAST(MAX(ts_us - prev_ts) AS BIGINT) AS max_gap_us
-        |  FROM l WHERE prev_ts IS NOT NULL GROUP BY 1),
-        |t AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1)
-        |SELECT g.event_type, n_events, n_gaps,
-        |  CASE WHEN uptime_us >= 0 THEN uptime_us // n_gaps ELSE 0 END AS mtbf_us,
-        |  max_gap_us, (n_gaps + 1) * 1000000 // n_events AS failure_rate_ppm
-        |FROM g JOIN t ON g.event_type = t.event_type
-        |ORDER BY g.event_type""".stripMargin,
-
-    // Same lag-12 sampling, same sign-safe milli ROC.
-    "win_momentum_roc" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |l AS (SELECT *, LAG(cents, 12) OVER (PARTITION BY event_type
-        |    ORDER BY ts_us, event_id) AS prev FROM e),
-        |r AS (SELECT *, CASE WHEN cents - prev >= 0
-        |    THEN (cents - prev) * 1000 // prev
-        |    ELSE -((prev - cents) * 1000 // prev) END AS roc_milli
-        |  FROM l WHERE prev IS NOT NULL AND prev > 0 AND event_id % 9 = 4)
-        |SELECT event_type, event_id, cents, prev, roc_milli,
-        |  CASE WHEN roc_milli > 80 THEN 'overbought'
-        |    WHEN roc_milli < -80 THEN 'oversold' ELSE 'neutral' END AS signal
-        |FROM r ORDER BY event_type, event_id""".stripMargin,
-
-    // Same literal Benford masses, same first-digit ppm gaps.
-    "agg_benford_mad" ->
-      s"""WITH uni AS (SELECT 'uniform' AS series,
-        |    ${duckMd5Bits("bfu", "doc_id", 8)} % 99000 + 1000 AS x
-        |  FROM documents),
-        |p2 AS (SELECT 'pow2' AS series,
-        |    CAST(1 AS BIGINT) << CAST(${duckMd5Bits("bfp", "doc_id", 8)} % 30 AS INT) AS x
-        |  FROM documents),
-        |a AS (SELECT series, CAST(substring(CAST(x AS VARCHAR), 1, 1) AS BIGINT) AS d
-        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM p2)),
-        |g AS (SELECT series, d, CAST(COUNT(*) AS BIGINT) AS c FROM a GROUP BY 1, 2),
-        |t AS (SELECT *, CAST(SUM(c) OVER (PARTITION BY series) AS BIGINT) AS n FROM g),
-        |m AS (SELECT series, n,
-        |    ABS(c * 1000000 // n - (CASE WHEN d = 1 THEN 301030 WHEN d = 2 THEN 176091
-        |      WHEN d = 3 THEN 124939 WHEN d = 4 THEN 96910 WHEN d = 5 THEN 79181
-        |      WHEN d = 6 THEN 66947 WHEN d = 7 THEN 57992 WHEN d = 8 THEN 51153
-        |      WHEN d = 9 THEN 45757 ELSE 0 END)) AS gap
-        |  FROM t)
-        |SELECT series, CAST(MAX(n) AS BIGINT) AS n,
-        |  CAST(COUNT(*) AS BIGINT) AS n_digits,
-        |  CAST(SUM(gap) // 9 AS BIGINT) AS mad_ppm,
-        |  SUM(gap) // 9 < 15000 AS conforms
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Same unweighted cell means, same ±contrasts ÷ 4.
-    "agg_factorial_effects" ->
-      s"""WITH t AS (SELECT doc_id,
-        |    ${duckMd5Bits("fea", "doc_id", 8)} % 2 AS a,
-        |    ${duckMd5Bits("feb", "doc_id", 8)} % 2 AS b,
-        |    ${duckMd5Bits("fec", "doc_id", 8)} % 2 AS c,
-        |    ${duckMd5Bits("fen", "doc_id", 8)} % 21 - 10 AS e
-        |  FROM documents),
-        |y AS (SELECT a, b, c, 100 + 20 * a + 10 * b + 15 * a * b + e AS y FROM t),
-        |cells AS (SELECT a, b, c, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS sy
-        |  FROM y GROUP BY 1, 2, 3),
-        |m AS (SELECT *, CASE WHEN sy >= 0 THEN sy * 1000 // n
-        |    ELSE -((0 - sy) * 1000 // n) END AS m_milli FROM cells),
-        |ct AS (SELECT
-        |    CAST(SUM(CASE WHEN a = 1 THEN m_milli ELSE -m_milli END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN b = 1 THEN m_milli ELSE -m_milli END) AS BIGINT) AS cb,
-        |    CAST(SUM(CASE WHEN c = 1 THEN m_milli ELSE -m_milli END) AS BIGINT) AS cc,
-        |    CAST(SUM(CASE WHEN a = b THEN m_milli ELSE -m_milli END) AS BIGINT) AS cab,
-        |    CAST(SUM(n) AS BIGINT) AS n_total
-        |  FROM m)
-        |SELECT n_total,
-        |  CASE WHEN ca >= 0 THEN ca // 4 ELSE -((0 - ca) // 4) END AS effect_a_milli,
-        |  CASE WHEN cb >= 0 THEN cb // 4 ELSE -((0 - cb) // 4) END AS effect_b_milli,
-        |  CASE WHEN cc >= 0 THEN cc // 4 ELSE -((0 - cc) // 4) END AS effect_c_milli,
-        |  CASE WHEN cab >= 0 THEN cab // 4 ELSE -((0 - cab) // 4) END AS effect_ab_milli
-        |FROM ct""".stripMargin,
-
-    // Same cut-centered segment OLS, same sign-safe milli DIVs.
-    "agg_its_segmented" ->
+    },
+      // Same cut-centered segment OLS, same sign-safe milli DIVs.
       s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
         |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_t,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
@@ -914,245 +795,239 @@ object Round11Ops extends Family {
         |  CAST(level_pre_milli AS BIGINT) AS level_pre_milli,
         |  CAST(level_post_milli AS BIGINT) AS level_post_milli,
         |  CAST(level_post_milli - level_pre_milli AS BIGINT) AS jump_milli
-        |FROM lv ORDER BY event_type""".stripMargin,
+        |FROM lv ORDER BY event_type""".stripMargin),
 
-    // Same six h-index rounds replayed as generated chained CTEs.
-    "graph_coreness" -> {
-      val rounds = (1 to 6).map { t =>
-        val prev = if (t == 1) "c0" else s"c${t - 1}"
-        s"""n$t AS (SELECT bi.src AS node, p.c AS nc
-           |  FROM bi JOIN $prev p ON p.node = bi.dst),
-           |r$t AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY node
-           |    ORDER BY nc DESC) AS BIGINT) AS rn FROM n$t),
-           |c$t AS MATERIALIZED (SELECT node, CAST(MAX(LEAST(rn, nc)) AS BIGINT) AS c
-           |  FROM r$t GROUP BY 1)"""
-      }.mkString(",\n")
-      s"""WITH ${GraphOps.coreOracleCtes},
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
-         |c0 AS MATERIALIZED (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS c
-         |  FROM bi GROUP BY 1),
-         |$rounds
-         |SELECT node, c AS coreness FROM c6 ORDER BY node""".stripMargin
+    // Momentum / rate-of-change — the percent-change oscillator beside
+    // win_rsi's bounded one: ROC = (x_t − x_{t−12})/x_{t−12} as a
+    // sign-safe milli DIV (cents are positive, so the denominator is
+    // safe; the numerator takes the magnitude-negate law), one
+    // partitioned sort, sampled ledger with the overbought/oversold
+    // ±80-milli flags.
+    Op("win_momentum_roc", (s, d) => {
+      val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
+      Tables.events(s, d)
+        .select(col("event_type"), col("event_id"), col("ts_us"),
+          floor(col("value") * 100).cast("bigint").as("cents"))
+        .withColumn("prev", lag("cents", 12).over(ord))
+        .where(col("prev").isNotNull && col("prev") > 0 && col("event_id") % 9 === 4)
+        .withColumn("roc_milli", expr(
+          """CASE WHEN cents - prev >= 0
+             THEN (cents - prev) * 1000 DIV prev
+             ELSE -((prev - cents) * 1000 DIV prev) END"""))
+        .withColumn("signal", expr(
+          """CASE WHEN roc_milli > 80 THEN 'overbought'
+             WHEN roc_milli < -80 THEN 'oversold' ELSE 'neutral' END"""))
+        .select("event_type", "event_id", "cents", "prev", "roc_milli", "signal")
+        .orderBy("event_type", "event_id")
     },
+      // Same lag-12 sampling, same sign-safe milli ROC.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |l AS (SELECT *, LAG(cents, 12) OVER (PARTITION BY event_type
+        |    ORDER BY ts_us, event_id) AS prev FROM e),
+        |r AS (SELECT *, CASE WHEN cents - prev >= 0
+        |    THEN (cents - prev) * 1000 // prev
+        |    ELSE -((prev - cents) * 1000 // prev) END AS roc_milli
+        |  FROM l WHERE prev IS NOT NULL AND prev > 0 AND event_id % 9 = 4)
+        |SELECT event_type, event_id, cents, prev, roc_milli,
+        |  CASE WHEN roc_milli > 80 THEN 'overbought'
+        |    WHEN roc_milli < -80 THEN 'oversold' ELSE 'neutral' END AS signal
+        |FROM r ORDER BY event_type, event_id""".stripMargin),
 
-    // The explicit NULL-padded form the by-name union must equal.
-    "api_union_missing_cols" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey, o_orderstatus,
-        |  CAST(NULL AS BIGINT) AS cents
-        |FROM orders WHERE o_orderkey % 200 = 1
-        |UNION ALL
-        |SELECT CAST(o_orderkey AS BIGINT), o_orderstatus,
-        |  CAST(FLOOR(o_totalprice * 100) AS BIGINT)
-        |FROM orders WHERE o_orderkey % 200 = 2
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // Same shift pack, same DIV/MOD unpack, same graded identity.
-    "fn_bitpack_roundtrip" ->
-      ("""WITH f AS (SELECT event_id, """ + (0 to 7).map(i =>
-          s"${duckMd5Bits(s"bp$i", "event_id", 8)} % ${if (i == 7) 128 else 256} AS f$i")
-          .mkString(", ") + """
-        |  FROM events WHERE event_id % 50 = 3),
-        |p AS (SELECT *, """ + (0 to 7).map(i => s"f$i * ${1L << (8 * i)}").mkString(" + ") + """ AS packed FROM f)
-        |SELECT event_id, packed, f0, f7,
-        |  """ + (0 to 7).map(i =>
-          s"packed // ${1L << (8 * i)} % ${if (i == 7) 128 else 256} = f$i").mkString(" AND ") + """ AS roundtrip_ok
-        |FROM p ORDER BY event_id""").stripMargin,
-
-    // Same integer trend statistic, same cross-multiplied z².
-    "agg_cochran_armitage" ->
-      s"""WITH t AS (SELECT doc_id,
-        |    ${duckMd5Bits("cad", "doc_id", 8)} % 5 AS dose
+    // Benford MAD conformity — the auditor's number (agg_benford asks
+    // "does it deviate?"; Nigrini's MAD bands say HOW MUCH): the nine
+    // Benford ppm masses as shared integer LITERALS (the
+    // transcendental-on-literals law — log10(1+1/d) never evaluates at
+    // runtime), two planted populations from the SAME hash stream —
+    // uniform values (first digits nowhere near Benford) and exact
+    // powers of two (whose leading digits famously track Benford) —
+    // MAD = Σ|p̂_d − benford_d| DIV 9 in exact ppm; the uniform
+    // population must fail conformity and sit far above the 2^k one.
+    Op("agg_benford_mad", (s, d) => {
+      val benford = Map(1 -> 301030L, 2 -> 176091L, 3 -> 124939L,
+        4 -> 96910L, 5 -> 79181L, 6 -> 66947L, 7 -> 57992L, 8 -> 51153L,
+        9 -> 45757L)
+      val bCase = (1 to 9).map(dd => s"WHEN d = $dd THEN ${benford(dd)}")
+        .mkString("CASE ", " ", " ELSE 0 END")
+      def firstDigit(xExpr: String, label: String) =
+        Tables.documents(s, d).select(col("doc_id"))
+          .withColumn("x", expr(xExpr))
+          .withColumn("d", expr("CAST(substring(CAST(x AS STRING), 1, 1) AS BIGINT)"))
+          .groupBy("d").agg(count(lit(1)).as("c"))
+          .withColumn("series", lit(label))
+      val uni = firstDigit(s"${md5Bits("bfu", "doc_id", 8)} % 99000 + 1000", "uniform")
+      val pow = firstDigit(
+        s"shiftleft(CAST(1 AS BIGINT), CAST(${md5Bits("bfp", "doc_id", 8)} % 30 AS INT))", "pow2")
+      uni.unionByName(pow)
+        .withColumn("n", sum("c").over(Window.partitionBy("series")))
+        .withColumn("gap", expr(s"abs(c * 1000000 DIV n - ($bCase))"))
+        .groupBy("series")
+        .agg(max("n").as("n"), count(lit(1)).as("n_digits"),
+          expr("sum(gap) DIV 9").as("mad_ppm"))
+        .withColumn("conforms", col("mad_ppm") < 15000L)
+        .orderBy("series")
+    },
+      // Same literal Benford masses, same first-digit ppm gaps.
+      s"""WITH uni AS (SELECT 'uniform' AS series,
+        |    ${duckMd5Bits("bfu", "doc_id", 8)} % 99000 + 1000 AS x
         |  FROM documents),
-        |c AS (SELECT dose,
-        |    CASE WHEN ${duckMd5Bits("cac", "doc_id", 8)} % 100
-        |      < 25 + 5 * dose THEN 1 ELSE 0 END AS conv
-        |  FROM t),
-        |g AS (SELECT dose, CAST(COUNT(*) AS BIGINT) AS ni, CAST(SUM(conv) AS BIGINT) AS xi
-        |  FROM c GROUP BY 1),
-        |a AS (SELECT CAST(SUM(ni) AS BIGINT) AS nn, CAST(SUM(xi) AS BIGINT) AS xx,
-        |    CAST(SUM(dose * xi) AS BIGINT) AS swx, CAST(SUM(dose * ni) AS BIGINT) AS swn,
-        |    CAST(SUM(dose * dose * ni) AS BIGINT) AS sw2n FROM g)
-        |SELECT nn, xx, swx * nn - swn * xx AS t_num,
-        |  CAST(CAST(xx AS HUGEINT) * (nn - xx)
-        |    * (CAST(nn AS HUGEINT) * sw2n - CAST(swn AS HUGEINT) * swn) AS BIGINT) AS var_n3,
-        |  CAST(swx * nn - swn * xx AS HUGEINT) * (swx * nn - swn * xx) * nn * 1000000
-        |    > CAST(3841600 AS HUGEINT) * (CAST(xx AS HUGEINT) * (nn - xx)
-        |      * (CAST(nn AS HUGEINT) * sw2n - CAST(swn AS HUGEINT) * swn)) AS significant
-        |FROM a""".stripMargin,
+        |p2 AS (SELECT 'pow2' AS series,
+        |    CAST(1 AS BIGINT) << CAST(${duckMd5Bits("bfp", "doc_id", 8)} % 30 AS INT) AS x
+        |  FROM documents),
+        |a AS (SELECT series, CAST(substring(CAST(x AS VARCHAR), 1, 1) AS BIGINT) AS d
+        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM p2)),
+        |g AS (SELECT series, d, CAST(COUNT(*) AS BIGINT) AS c FROM a GROUP BY 1, 2),
+        |t AS (SELECT *, CAST(SUM(c) OVER (PARTITION BY series) AS BIGINT) AS n FROM g),
+        |m AS (SELECT series, n,
+        |    ABS(c * 1000000 // n - (CASE WHEN d = 1 THEN 301030 WHEN d = 2 THEN 176091
+        |      WHEN d = 3 THEN 124939 WHEN d = 4 THEN 96910 WHEN d = 5 THEN 79181
+        |      WHEN d = 6 THEN 66947 WHEN d = 7 THEN 57992 WHEN d = 8 THEN 51153
+        |      WHEN d = 9 THEN 45757 ELSE 0 END)) AS gap
+        |  FROM t)
+        |SELECT series, CAST(MAX(n) AS BIGINT) AS n,
+        |  CAST(COUNT(*) AS BIGINT) AS n_digits,
+        |  CAST(SUM(gap) // 9 AS BIGINT) AS mad_ppm,
+        |  SUM(gap) // 9 < 15000 AS conforms
+        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // Same fixed-reference PH recursion-free form, same planted shift.
-    "win_page_hinkley" ->
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_t,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY epoch_us(ts), event_id) AS BIGINT) AS rn
+    // OEE — overall equipment effectiveness, the manufacturing KPI that
+    // multiplies three ratios (availability × performance × quality);
+    // each planted ratio is an exact count fraction, each stage one
+    // declared ppm DIV, and the product re-truncates through ppm² —
+    // both engines replay the identical truncation chain, and the world
+    //-class ≥ 85% verdict is graded on the final ppm.
+    Op("agg_oee", (s, d) => {
+      Tables.events(s, d).select(col("event_id"), col("event_type"))
+        .withColumn("scheduled", lit(1L))
+        .withColumn("running", expr(s"IF(${md5Bits("oea", "event_id", 8)} % 100 < 92, 1, 0)"))
+        .withColumn("at_speed", expr(
+          s"IF(running = 1 AND ${md5Bits("oep", "event_id", 8)} % 100 < 96, 1, 0)"))
+        .withColumn("good", expr(
+          s"IF(at_speed = 1 AND ${md5Bits("oeq", "event_id", 8)} % 100 < 97, 1, 0)"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum("running").as("run_units"),
+          sum("at_speed").as("speed_units"),
+          sum("good").as("good_units"))
+        .withColumn("availability_ppm", expr("run_units * 1000000 DIV n"))
+        .withColumn("performance_ppm", expr("speed_units * 1000000 DIV run_units"))
+        .withColumn("quality_ppm", expr("good_units * 1000000 DIV speed_units"))
+        .withColumn("oee_ppm", expr(
+          """availability_ppm * performance_ppm DIV 1000000
+             * quality_ppm DIV 1000000"""))
+        .withColumn("world_class", col("oee_ppm") >= 850000L)
+        .select("event_type", "n", "availability_ppm", "performance_ppm",
+          "quality_ppm", "oee_ppm", "world_class")
+        .orderBy("event_type")
+    },
+      // Same three planted ratios, same ppm truncation chain.
+      s"""WITH t AS (SELECT event_type, event_id,
+        |    CASE WHEN ${duckMd5Bits("oea", "event_id", 8)} % 100 < 92
+        |      THEN 1 ELSE 0 END AS running
         |  FROM events),
-        |x AS (SELECT *, 500 + ${duckMd5Bits("phn", "event_id", 8)} % 41 - 20
-        |    + CASE WHEN rn * 10 > n_t * 6 THEN 80 ELSE 0 END AS x
-        |  FROM e),
-        |m AS (SELECT *, CAST(SUM(x - 500 - 5) OVER w AS BIGINT) AS m_t
-        |  FROM x WINDOW w AS (PARTITION BY event_type ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING)),
-        |mm AS (SELECT *, CAST(MIN(m_t) OVER (PARTITION BY event_type ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS m_min FROM m),
-        |al AS (SELECT *, m_t - m_min > 2000 AS alarm FROM mm),
-        |g AS (SELECT event_type, CAST(MAX(n_t) AS BIGINT) AS n,
-        |    CAST(SUM(CASE WHEN alarm THEN 1 ELSE 0 END) AS BIGINT) AS n_alarms,
-        |    CAST(MIN(CASE WHEN alarm THEN rn END) AS BIGINT) AS first_alarm_rn
-        |  FROM al GROUP BY 1)
-        |SELECT event_type, n, n_alarms, first_alarm_rn,
-        |  first_alarm_rn * 100 // n AS first_alarm_pct,
-        |  first_alarm_rn * 10 > n * 6 AS fired_after_shift
-        |FROM g ORDER BY event_type""".stripMargin,
-
-    // Same milli quantization, same (dot DESC, cand ASC) total order.
-    "llm_matryoshka_recall" ->
-      """WITH dims AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS idx,
-        |    CAST(FLOOR(embedding[i] * 1000) AS BIGINT) AS q
-        |  FROM embeddings, generate_series(1, 64) t(i)),
-        |dots AS (SELECT w AS width, p.vec_id AS probe, c.vec_id AS cand,
-        |    CAST(SUM(p.q * c.q) AS BIGINT) AS dot
-        |  FROM dims p JOIN dims c ON p.idx = c.idx
-        |  CROSS JOIN (SELECT UNNEST([16, 64]) AS w) wt
-        |  WHERE p.vec_id < 10 AND p.vec_id <> c.vec_id AND p.idx < w AND c.idx < w
-        |  GROUP BY 1, 2, 3),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY width, probe
-        |    ORDER BY dot DESC, cand) AS rk FROM dots),
-        |t1 AS (SELECT probe,
-        |    MAX(CASE WHEN width = 64 THEN cand END) AS full_top1,
-        |    MAX(CASE WHEN width = 16 THEN cand END) AS trunc_top1
-        |  FROM r WHERE rk = 1 GROUP BY 1)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
-        |  CAST(SUM(CASE WHEN full_top1 = trunc_top1 THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-        |  CAST(SUM(CASE WHEN full_top1 = trunc_top1 THEN 1 ELSE 0 END) * 1000000 // COUNT(*) AS BIGINT) AS recall1_ppm
-        |FROM t1""".stripMargin,
-
-    // Same planted breakage, same json_valid + TRY_CAST classes.
-    "llm_json_schema_validate" ->
-      s"""WITH t AS (SELECT doc_id,
-        |    ${duckMd5Bits("jsc", "doc_id", 8)} % 100 AS conf
-        |  FROM documents),
-        |r AS (SELECT doc_id,
-        |    CASE
-        |      WHEN doc_id % 19 = 0 THEN '{"answer":"a","confidence":' || CAST(conf AS VARCHAR) || ',"sources":[1,2]'
-        |      WHEN doc_id % 13 = 0 THEN '{"answer":"a","sources":[1,2]}'
-        |      WHEN doc_id % 17 = 0 THEN '{"answer":"a","confidence":"high","sources":[1,2]}'
-        |      ELSE '{"answer":"a","confidence":' || CAST(conf AS VARCHAR) || ',"sources":[1,2]}'
-        |    END AS resp
+        |v AS (SELECT event_type, running,
+        |    CASE WHEN running = 1 AND ${duckMd5Bits("oep", "event_id", 8)} % 100 < 96
+        |      THEN 1 ELSE 0 END AS at_speed,
+        |    event_id
         |  FROM t),
-        |c AS (SELECT
-        |    CASE WHEN NOT json_valid(resp) THEN 1 ELSE 0 END AS malformed,
-        |    CASE WHEN json_valid(resp)
-        |      AND TRY_CAST(json_extract_string(resp, '$$.confidence') AS BIGINT) IS NULL
-        |      THEN 1 ELSE 0 END AS conf_bad,
-        |    CASE WHEN json_valid(resp)
-        |      AND TRY_CAST(json_extract_string(resp, '$$.confidence') AS BIGINT) IS NOT NULL
-        |      AND json_array_length(json_extract(resp, '$$.sources')) = 2
-        |      THEN 1 ELSE 0 END AS valid
-        |  FROM r)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(malformed) AS BIGINT) AS n_malformed,
-        |  CAST(SUM(conf_bad) AS BIGINT) AS n_conf_bad,
-        |  CAST(SUM(valid) AS BIGINT) AS n_valid,
-        |  CAST(SUM(valid) * 1000000 // COUNT(*) AS BIGINT) AS valid_ppm
-        |FROM c""".stripMargin,
+        |w AS (SELECT event_type, running, at_speed,
+        |    CASE WHEN at_speed = 1 AND ${duckMd5Bits("oeq", "event_id", 8)} % 100 < 97
+        |      THEN 1 ELSE 0 END AS good
+        |  FROM v),
+        |g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(SUM(running) AS BIGINT) AS run_units,
+        |    CAST(SUM(at_speed) AS BIGINT) AS speed_units,
+        |    CAST(SUM(good) AS BIGINT) AS good_units
+        |  FROM w GROUP BY 1),
+        |p AS (SELECT *, run_units * 1000000 // n AS availability_ppm,
+        |    speed_units * 1000000 // run_units AS performance_ppm,
+        |    good_units * 1000000 // speed_units AS quality_ppm FROM g)
+        |SELECT event_type, n, availability_ppm, performance_ppm, quality_ppm,
+        |  availability_ppm * performance_ppm // 1000000 * quality_ppm // 1000000 AS oee_ppm,
+        |  availability_ppm * performance_ppm // 1000000 * quality_ppm // 1000000 >= 850000 AS world_class
+        |FROM p ORDER BY event_type""".stripMargin),
 
-    // Same step-down running AND over the 20-row rank order.
-    "agg_holm_bonferroni" ->
-      s"""WITH h AS (SELECT doc_id AS h FROM documents WHERE doc_id < 20),
-        |p AS (SELECT h,
-        |    CASE WHEN h < 5
-        |      THEN ${duckMd5Bits("hbp", "h", 8)} % 500
-        |      ELSE ${duckMd5Bits("hbq", "h", 8)} % 1000000
-        |    END AS p_ppm
-        |  FROM h),
-        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY p_ppm, h) AS BIGINT) AS i FROM p),
-        |s AS (SELECT *, CASE WHEN p_ppm * (20 - i + 1) <= 50000 THEN 1 ELSE 0 END AS pass FROM r),
-        |q AS (SELECT *, MIN(pass) OVER (ORDER BY p_ppm, h
-        |    ROWS UNBOUNDED PRECEDING) = 1 AS holm_rejected FROM s)
-        |SELECT h, i, p_ppm, holm_rejected,
-        |  p_ppm * 20 <= 50000 AS bonf_rejected
-        |FROM q ORDER BY i""".stripMargin,
+    // MTBF / MTTR — the reliability pair read off an event log (uptime
+    // between failures, downtime to repair): planted ~2% failure marks
+    // on the per-type time axis, inter-failure gaps in exact
+    // microseconds via lag over failure events only, MTBF = Σgap DIV
+    // (k−1) and the failure-rate ppm beside it — the shape every SRE
+    // error-budget review reads.
+    Op("win_mtbf", (s, d) => {
+      val fails = Tables.events(s, d)
+        .select(col("event_type"), col("event_id"), col("ts_us"))
+        .where(expr(s"${md5Bits("mtf", "event_id", 8)} % 50 = 0"))
+      val ord = Window.partitionBy("event_type").orderBy(col("ts_us"), col("event_id"))
+      val gaps = fails
+        .withColumn("prev_ts", lag("ts_us", 1).over(ord))
+        .where(col("prev_ts").isNotNull)
+        .withColumn("gap_us", col("ts_us") - col("prev_ts"))
+      val totals = Tables.events(s, d).groupBy("event_type")
+        .agg(count(lit(1)).as("n_events"))
+      gaps.groupBy("event_type")
+        .agg(count(lit(1)).as("n_gaps"),
+          sum("gap_us").as("uptime_us"),
+          max("gap_us").as("max_gap_us"))
+        .withColumn("mtbf_us", expr(
+          "CASE WHEN uptime_us >= 0 THEN uptime_us DIV n_gaps ELSE 0 END"))
+        .join(totals, "event_type")
+        .withColumn("failure_rate_ppm", expr("(n_gaps + 1) * 1000000 DIV n_events"))
+        .select("event_type", "n_events", "n_gaps", "mtbf_us",
+          "max_gap_us", "failure_rate_ppm")
+        .orderBy("event_type")
+    },
+      // Same ~2% failure marks, same inter-failure gap arithmetic.
+      s"""WITH f AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us
+        |  FROM events
+        |  WHERE ${duckMd5Bits("mtf", "event_id", 8)} % 50 = 0),
+        |l AS (SELECT *, LAG(ts_us, 1) OVER (PARTITION BY event_type
+        |    ORDER BY ts_us, event_id) AS prev_ts FROM f),
+        |g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_gaps,
+        |    CAST(SUM(ts_us - prev_ts) AS BIGINT) AS uptime_us,
+        |    CAST(MAX(ts_us - prev_ts) AS BIGINT) AS max_gap_us
+        |  FROM l WHERE prev_ts IS NOT NULL GROUP BY 1),
+        |t AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
+        |  FROM events GROUP BY 1)
+        |SELECT g.event_type, n_events, n_gaps,
+        |  CASE WHEN uptime_us >= 0 THEN uptime_us // n_gaps ELSE 0 END AS mtbf_us,
+        |  max_gap_us, (n_gaps + 1) * 1000000 // n_events AS failure_rate_ppm
+        |FROM g JOIN t ON g.event_type = t.event_type
+        |ORDER BY g.event_type""".stripMargin),
 
-    // Same unrolled 7-digit codec, same graded identity.
-    "fn_base36_roundtrip" ->
-      ("""WITH e AS (SELECT o_orderkey,
-        |    """ + (0 to 6).reverse.map(i =>
-            s"substring('0123456789abcdefghijklmnopqrstuvwxyz', CAST(o_orderkey // ${math.pow(36, i).toLong} % 36 AS INT) + 1, 1)")
-            .mkString(" || ") + """ AS b36
-        |  FROM orders WHERE o_orderkey % 100 = 1),
-        |d AS (SELECT *, """ + (0 to 6).map(i =>
-            s"(CAST(instr('0123456789abcdefghijklmnopqrstuvwxyz', substring(b36, ${7 - i}, 1)) AS BIGINT) - 1) * ${math.pow(36, i).toLong}")
-            .mkString(" + ") + """ AS decoded FROM e)
-        |SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey, b36, decoded,
-        |  decoded = o_orderkey AS roundtrip_ok
-        |FROM d ORDER BY o_orderkey""").stripMargin,
-
-    // Same two layouts recomputed arithmetically from orders.
-    "warehouse_clustering_depth" ->
-      """WITH mx AS (SELECT MAX(o_orderkey) AS mx FROM orders),
-        |modf AS (SELECT o_orderkey % 8 AS f,
-        |    CAST(MIN(o_orderkey) AS BIGINT) AS lo, CAST(MAX(o_orderkey) AS BIGINT) AS hi
-        |  FROM orders GROUP BY 1),
-        |rngf AS (SELECT LEAST(o_orderkey * 8 // (mx + 1), 7) AS f,
-        |    CAST(MIN(o_orderkey) AS BIGINT) AS lo, CAST(MAX(o_orderkey) AS BIGINT) AS hi
-        |  FROM orders CROSS JOIN mx GROUP BY 1),
-        |files AS (SELECT 'modulo' AS layout, f, lo, hi FROM modf
-        |  UNION ALL SELECT 'range', f, lo, hi FROM rngf),
-        |pf AS (SELECT a.layout, a.f,
-        |    CAST(SUM(CASE WHEN b.lo <= a.lo AND a.lo <= b.hi THEN 1 ELSE 0 END) AS BIGINT) AS depth_at_lo,
-        |    CAST(SUM(CASE WHEN a.f < b.f AND a.lo <= b.hi AND b.lo <= a.hi THEN 1 ELSE 0 END) AS BIGINT) AS pairs_from_f
-        |  FROM files a JOIN files b ON a.layout = b.layout
-        |  GROUP BY 1, 2)
-        |SELECT layout, CAST(COUNT(*) AS BIGINT) AS n_files,
-        |  CAST(MAX(depth_at_lo) AS BIGINT) AS max_depth,
-        |  CAST(SUM(pairs_from_f) AS BIGINT) AS overlap_pairs
-        |FROM pf GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Same grid, same per-term precision truncation, same final DIV.
-    "agg_auc_pr" ->
-      s"""WITH t AS (SELECT doc_id,
-        |    CASE WHEN ${duckMd5Bits("apt", "doc_id", 8)} % 10 = 0
-        |      THEN 1 ELSE 0 END AS truth
-        |  FROM documents),
-        |sc AS (SELECT truth,
-        |    ${duckMd5Bits("aps", "doc_id", 8)} % 700000
-        |      + truth * 300000 AS score FROM t),
-        |g AS (SELECT CAST(1000000 - v * 50000 AS BIGINT) AS thr FROM generate_series(1, 19) s(v)),
-        |cm AS (SELECT thr,
-        |    CAST(SUM(CASE WHEN truth = 1 AND score >= thr THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(SUM(CASE WHEN truth = 0 AND score >= thr THEN 1 ELSE 0 END) AS BIGINT) AS fp
-        |  FROM sc CROSS JOIN g GROUP BY 1),
-        |st AS (SELECT *, COALESCE(LAG(tp, 1) OVER (ORDER BY thr DESC), 0) AS tp_prev FROM cm),
-        |c AS (SELECT CAST(SUM(CASE WHEN tp + fp > 0
-        |    THEN (tp - tp_prev) * tp * 1000000 // (tp + fp) ELSE 0 END) AS BIGINT) AS contrib_sum
-        |  FROM st),
-        |tot AS (SELECT CAST(SUM(truth) AS BIGINT) AS p, CAST(COUNT(*) AS BIGINT) AS n FROM t)
-        |SELECT p, n, contrib_sum // p AS auc_pr_ppm,
-        |  p * 1000000 // n AS baseline_ppm,
-        |  contrib_sum // p > 5 * (p * 1000000 // n) AS informative
-        |FROM c CROSS JOIN tot""".stripMargin,
-
-    // Same mixture plant, same cleared moment rationals.
-    "agg_negbin_moments" ->
-      s"""WITH t AS (SELECT doc_id,
-        |    ${duckMd5Bits("nbg", "doc_id", 8)} % 3 AS g
-        |  FROM documents),
-        |v AS (SELECT ${duckMd5Bits("nbx", "doc_id", 8)} % (2 + 3 * g) AS x FROM t),
-        |a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx,
-        |    CAST(SUM(x * x) AS BIGINT) AS sxx FROM v)
-        |SELECT n, sx, n * sxx - sx * sx > n * sx AS overdispersed,
-        |  CAST(CASE WHEN n * sxx - sx * sx - n * sx > 0
-        |    THEN CAST(sx AS HUGEINT) * sx * 1000
-        |      // (CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx - CAST(n AS HUGEINT) * sx)
-        |    ELSE -1 END AS BIGINT) AS r_milli,
-        |  CAST((CAST(n AS HUGEINT) * sx * 1000000)
-        |    // (CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx) AS BIGINT) AS p_ppm
-        |FROM a""".stripMargin,
-
-    // Same shuffle order, same tie-free composite, same harmonic sum.
-    "win_record_highs" ->
+    // Record highs — the H_n law (in any exchangeable tie-free sequence
+    // the expected number of running records is the harmonic number —
+    // position, not values, drives it): per-type md5 shuffle order with
+    // an INDEPENDENT-namespace tie-break key (order and value sharing a
+    // hash would break exchangeability), records by a running strict
+    // max, E in exact micro as Σ 10⁶ DIV i over a broadcast range, and
+    // the 3σ sanity verdict cross-multiplied with Var ≈ H_n.
+    Op("win_record_highs", (s, d) => {
+      val ord = Window.partitionBy("event_type").orderBy(col("ok"))
+      val recs = Tables.events(s, d)
+        .select(col("event_type"), col("event_id"),
+          floor(col("value") * 100).cast("bigint").as("cents"))
+        .withColumn("ok", expr(md5Bits("ro", "event_id", 8)))
+        // 2^33 span keeps the composite collision-free and cents-major
+        .withColumn("x", expr(s"cents * 8589934592 + ${md5Bits("rv", "event_id", 8)}"))
+        .withColumn("rm", max("x").over(ord.rowsBetween(Window.unboundedPreceding, -1)))
+        .withColumn("is_record", col("rm").isNull || col("x") > col("rm"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("is_record"), 1L).otherwise(0L)).as("records"))
+      val maxN = recs.agg(max("n")).collect()(0).getLong(0)
+      val harmonics = recs.select("event_type", "n")
+        .join(s.range(1, maxN + 1).select(col("id").as("i")), col("i") <= col("n"))
+        .groupBy("event_type")
+        .agg(sum(expr("1000000 DIV i")).as("e_micro"))
+      recs.join(harmonics, "event_type")
+        .withColumn("within_3sigma", expr(
+          """CAST(records * 1000000 - e_micro AS DECIMAL(38,0))
+             * (records * 1000000 - e_micro)
+             < CAST(9 AS DECIMAL(38,0)) * e_micro * 1000000"""))
+        .select("event_type", "n", "records", "e_micro", "within_3sigma")
+        .orderBy("event_type")
+    },
+      // Same shuffle order, same tie-free composite, same harmonic sum.
       s"""WITH e AS (SELECT event_type, event_id,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
         |    ${duckMd5Bits("ro", "event_id", 8)} AS ok,
@@ -1174,10 +1049,40 @@ object Round11Ops extends Family {
         |  CAST(records * 1000000 - e_micro AS HUGEINT) * (records * 1000000 - e_micro)
         |    < CAST(9 AS HUGEINT) * e_micro * 1000000 AS within_3sigma
         |FROM g JOIN h ON g.event_type = h.event_type
-        |ORDER BY g.event_type""".stripMargin,
+        |ORDER BY g.event_type""".stripMargin),
 
-    // Same price buckets, same volume-ranked 70% value area.
-    "win_volume_profile" ->
+    // Volume profile — WHERE the volume traded, not when (win_vwap
+    // averages over time; the profile histograms over PRICE): md5
+    // volumes into 100-cent price buckets, POC = the modal bucket
+    // (volume desc, bucket asc — total order), and the value area as
+    // the volume-ranked 70% variant (take buckets by volume rank while
+    // the cumulative volume BEFORE the bucket is under 7·total/10 —
+    // fully cleared, no percentage ever materializes). The rank window
+    // runs over price buckets per type — bounded by the price range,
+    // not by n.
+    Op("win_volume_profile", (s, d) => {
+      val buckets = Tables.events(s, d)
+        .select(col("event_type"),
+          expr("CAST(FLOOR(value * 100) AS BIGINT) DIV 100").as("pb"),
+          expr(s"${md5Bits("vpv", "event_id", 8)} % 100 + 1").as("vol"))
+        .groupBy("event_type", "pb")
+        .agg(sum("vol").as("v"))
+      val wRank = Window.partitionBy("event_type").orderBy(col("v").desc, col("pb"))
+      buckets
+        .withColumn("rk", row_number().over(wRank).cast("bigint"))
+        .withColumn("cum_before", coalesce(sum("v").over(
+          wRank.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn("tot", sum("v").over(Window.partitionBy("event_type")))
+        .withColumn("in_va", expr("10 * cum_before < 7 * tot"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_buckets"),
+          max(when(col("rk") === 1, col("pb"))).as("poc_pb"),
+          sum(when(col("in_va"), 1L).otherwise(0L)).as("va_buckets"),
+          sum(when(col("in_va"), col("v")).otherwise(0L)).as("va_vol"),
+          max("tot").as("tot_vol"))
+        .orderBy("event_type")
+    },
+      // Same price buckets, same volume-ranked 70% value area.
       s"""WITH e AS (SELECT event_type,
         |    CAST(FLOOR(value * 100) AS BIGINT) // 100 AS pb,
         |    ${duckMd5Bits("vpv", "event_id", 8)} % 100 + 1 AS vol
@@ -1193,10 +1098,35 @@ object Round11Ops extends Family {
         |  CAST(SUM(CASE WHEN 10 * cum_before < 7 * tot THEN 1 ELSE 0 END) AS BIGINT) AS va_buckets,
         |  CAST(SUM(CASE WHEN 10 * cum_before < 7 * tot THEN v ELSE 0 END) AS BIGINT) AS va_vol,
         |  CAST(MAX(tot) AS BIGINT) AS tot_vol
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // Same 20-candidate plant, same nested top-k recall ppms.
-    "llm_recall_at_k" ->
+    // Recall@k curve — the retrieval eval beside llm_retrieval_mrr's
+    // single number (capacity planning reads the CURVE: how much does
+    // k=10 buy over k=5?): every 7th doc is a query with 3 planted
+    // relevant candidates among 20, scores = md5 + a +300 relevance
+    // bonus (so ranking is good but imperfect), per-query 20-row rank
+    // window, recall@{1,5,10} macro-averaged in exact ppm; the curve
+    // must be monotone by construction of nested top-k sets.
+    Op("llm_recall_at_k", (s, d) => {
+      val qs = Tables.documents(s, d).where(col("doc_id") % 7 === 0)
+        .select(col("doc_id").as("q"))
+      val cand = qs.crossJoin(broadcast(s.range(0, 20).select(col("id").as("k"))))
+        .withColumn("relevant", expr("IF(k < 3, 1, 0)"))
+        .withColumn("score", expr(
+          s"${md5Bits("concat('rak:', CAST(q AS STRING), ':', CAST(k AS STRING))", 8)} % 1000 + relevant * 300"))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("q").orderBy(col("score").desc, col("k"))).cast("bigint"))
+      cand.agg(countDistinct("q").as("nq"),
+          sum(when(col("rk") <= 1, col("relevant")).otherwise(0L)).as("hit1"),
+          sum(when(col("rk") <= 5, col("relevant")).otherwise(0L)).as("hit5"),
+          sum(when(col("rk") <= 10, col("relevant")).otherwise(0L)).as("hit10"))
+        .withColumn("recall1_ppm", expr("hit1 * 1000000 DIV (3 * nq)"))
+        .withColumn("recall5_ppm", expr("hit5 * 1000000 DIV (3 * nq)"))
+        .withColumn("recall10_ppm", expr("hit10 * 1000000 DIV (3 * nq)"))
+        .select("nq", "hit1", "hit5", "hit10",
+          "recall1_ppm", "recall5_ppm", "recall10_ppm")
+    },
+      // Same 20-candidate plant, same nested top-k recall ppms.
       s"""WITH q AS (SELECT doc_id AS q FROM documents WHERE doc_id % 7 = 0),
         |k AS (SELECT CAST(v AS BIGINT) AS k FROM generate_series(0, 19) s(v)),
         |c AS (SELECT q, k, CASE WHEN k < 3 THEN 1 ELSE 0 END AS relevant,
@@ -1214,10 +1144,31 @@ object Round11Ops extends Family {
         |  hit1 * 1000000 // (3 * nq) AS recall1_ppm,
         |  hit5 * 1000000 // (3 * nq) AS recall5_ppm,
         |  hit10 * 1000000 // (3 * nq) AS recall10_ppm
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
 
-    // Same mean-5 plants, same cross-multiplied 3/2 verdict.
-    "agg_dispersion_index" ->
+    // Dispersion index — overdispersion vs the Poisson/equi baseline
+    // (count data whose variance outruns its mean breaks every Poisson
+    // assumption downstream): the SAME mean-5 plant built two ways — a
+    // flat uniform (D = 2, overdispersed) and a sum-of-two-dice shape
+    // (D ≈ 1.17) — D = (nΣx²−Sx²)/((n−1)·Sx) exact milli, the D > 3/2
+    // verdict fully cross-multiplied 2(nΣx²−Sx²) > 3(n−1)Sx.
+    Op("agg_dispersion_index", (s, d) => {
+      def series(xExpr: String, label: String) =
+        Tables.documents(s, d).select(col("doc_id"))
+          .withColumn("x", expr(xExpr))
+          .agg(count(lit(1)).as("n"), sum("x").as("sx"),
+            sum(expr("x * x")).as("sxx"))
+          .withColumn("series", lit(label))
+      series(s"${md5Bits("dia", "doc_id", 8)} % 11", "uniform")
+        .unionByName(series(s"${md5Bits("dib", "doc_id", 8)} % 6 + ${md5Bits("dic", "doc_id", 8)} % 6", "two_dice"))
+        .withColumn("d_milli", expr(
+          "(n * sxx - sx * sx) * 1000 DIV ((n - 1) * sx)"))
+        .withColumn("overdispersed", expr(
+          "2 * (n * sxx - sx * sx) > 3 * (n - 1) * sx"))
+        .select("series", "n", "sx", "d_milli", "overdispersed")
+        .orderBy("series")
+    },
+      // Same mean-5 plants, same cross-multiplied 3/2 verdict.
       s"""WITH a AS (SELECT 'uniform' AS series,
         |    ${duckMd5Bits("dia", "doc_id", 8)} % 11 AS x
         |  FROM documents
@@ -1232,6 +1183,6 @@ object Round11Ops extends Family {
         |SELECT series, n, sx,
         |  (n * sxx - sx * sx) * 1000 // ((n - 1) * sx) AS d_milli,
         |  2 * (n * sxx - sx * sx) > 3 * (n - 1) * sx AS overdispersed
-        |FROM g ORDER BY series""".stripMargin
+        |FROM g ORDER BY series""".stripMargin)
   )
 }

@@ -21,7 +21,7 @@ object Round12Ops extends Family {
   @volatile var arrowBatches: org.apache.spark.util.LongAccumulator = _
   @volatile var arrowRows: org.apache.spark.util.LongAccumulator = _
 
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // Arrow-vectorized batch UDF — the Scala-native `mapInArrow` class of
     // operator: whole Arrow RecordBatches in, whole RecordBatches out,
     // user code touching columnar VECTORS (VarCharVector/BigIntVector),
@@ -33,7 +33,7 @@ object Round12Ops extends Family {
     // rides spark.sql.execution.arrow.maxRecordsPerBatch (10k default),
     // so executor memory per task is bounded regardless of corpus size;
     // partitions stream batch-by-batch through constant-size roots.
-    "udf_arrow_batch" -> ((s, d) => {
+    Op("udf_arrow_batch", (s, d) => {
       val in = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val inSchema = in.schema
       val outSchema = StructType(Seq(
@@ -107,7 +107,14 @@ object Round12Ops extends Family {
         }
       }
       ArrowBatchBridge.fromBatchRdd(s, outBatches, outSchema, tz).orderBy("doc_id")
-    }),
+    },
+      // Byte-level profile replay: strlen is BYTES in DuckDB; tokens =
+      // non-empty pieces after splitting on ASCII-whitespace runs.
+      """SELECT doc_id,
+        |  CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
+        |    x -> x <> '')) AS BIGINT) AS n_tokens,
+        |  CAST(strlen(text) AS BIGINT) AS n_bytes
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // Hive ACID (ORC merge-on-read) — the warehouse sibling of the
     // Iceberg/Delta readers: a transactional table on disk is base files
@@ -121,26 +128,8 @@ object Round12Ops extends Family {
     // delta with a DISTRIBUTED anti-join on the 3-part row id (never a
     // collected delete set — a delete delta at 100 TB can hold 10⁹
     // ids). Oracle replays the delete predicates over the source.
-    "source_hive_acid_read" -> ((s, d) => {
-      val root = Scratch.staged("hive_acid", d) { root =>
-        val o = HiveAcid.orders(s, d)
-        HiveAcid.acidify(o.where(col("k") % 2 === 0), 1L)
-          .write.mode("overwrite").orc(s"$root/base_0000001")
-        HiveAcid.acidify(o.where(col("k") % 2 === 1), 2L)
-          .write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
-        // delete delta: a third transaction removes every 10th base row
-        // and every odd multiple of 7 from the insert delta. A delete
-        // delta carries only row IDENTITY — no payload (the ACID layout
-        // nulls `row`; omitting the column entirely keeps the ORC
-        // vectorized reader happy and the bytes smaller).
-        o.where(col("k") % 10 === 0 || (col("k") % 2 === 1 && col("k") % 7 === 0))
-          .select(lit(2).as("operation"),
-            when(col("k") % 2 === 0, 1L).otherwise(2L).as("originalTransaction"),
-            (col("k") % 4).cast("int").as("bucket"),
-            col("k").as("rowId"),
-            lit(3L).as("currentTransaction"))
-          .write.mode("overwrite").orc(s"$root/delete_delta_0000003_0000003")
-      }
+    Op("source_hive_acid_read", (s, d) => {
+      val root = Scratch.staged("hive_acid", d)(HiveAcid.stage(s, d))
       val rootP = java.nio.file.Paths.get(root)
       // ---- the reader: directory-grammar listing (driver-side, O(dirs),
       // like any table-format snapshot resolution), then distributed MOR.
@@ -183,7 +172,16 @@ object Round12Ops extends Family {
           .orderBy("o_orderstatus")
           .localCheckpoint() // materialize before the conf is restored
       }
-    }),
+    },
+      // Merge-on-read replay: live = inserts of txns 1 (even keys) and 2
+      // (odd keys) minus the txn-3 delete set (every 10th key; odd
+      // multiples of 7).
+      """SELECT o_orderstatus, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+        |FROM orders
+        |WHERE NOT (o_orderkey % 10 = 0
+        |       OR (o_orderkey % 2 = 1 AND o_orderkey % 7 = 0))
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
     // ANN index maintenance lifecycle — completes llm_dedup_incremental's
     // serving story for the IVF side: a PERSISTED index ages as the
@@ -206,7 +204,7 @@ object Round12Ops extends Family {
     // is exact integers on floor(x·10⁴), so DuckDB replays bit-for-bit;
     // the assignment join is Θ(n·√n) at every scale (the IVF law from
     // llm_ann_ivf_pq).
-    "llm_ann_index_maintain" -> ((s, d) => {
+    Op("llm_ann_index_maintain", (s, d) => {
       // Coordinates stay ARRAYS end to end: every dot product runs
       // scan-side against a BROADCAST centroid table — the first cut
       // shuffled n·√n·64 rows per phase and cost 28 calib-units. The
@@ -298,7 +296,10 @@ object Round12Ops extends Family {
       val fresh = phase("refreshed", centroidsOf(union, modFresh), union,
         Scratch.opDir("ann_idx_fresh", d))
       stale.unionByName(fresh).orderBy("phase")
-    }),
+    },
+      // Full lifecycle replay in SQL: same md5 centroid sampling, same
+      // exact-integer dots, same 2-probe/top-3 search, both phases.
+      AnnMaintainOracle.sql),
 
     // Two-sample Kolmogorov–Smirnov — the distribution-shift test a
     // data-drift monitor runs between cohorts: cohorts = orderkey
@@ -308,7 +309,7 @@ object Round12Ops extends Family {
     // the critical band — D² · 10⁶ > 1.358² · (n0+n1) · n0·n1 — in
     // DECIMAL(38,0) (D_num² alone overflows int64 at sf0.1). One value
     // rollup + one ordered window; no pairwise work at any scale.
-    "agg_ks_test" -> ((s, d) => {
+    Op("agg_ks_test", (s, d) => {
       val t = Tables.orders(s, d).select(
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)").as("cents"),
         (col("o_orderkey") % 2).cast("int").as("grp"))
@@ -344,7 +345,28 @@ object Round12Ops extends Family {
           expr("""CAST(d_num AS DECIMAL(38,0)) * d_num * 1000000
                  | > CAST(1844164 AS DECIMAL(38,0)) * (n0 + n1) * n0 * n1""".stripMargin)
             .as("reject_95"))
-    }),
+    },
+      // Same distinct-value ECDF walk; the verdict compare is HUGEINT in
+      // DuckDB (its native wide integer) against Spark's DECIMAL(38,0).
+      """WITH t AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS cents,
+        |    CAST(o_orderkey % 2 AS INT) AS grp FROM orders),
+        |v AS (SELECT cents,
+        |    SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS d0,
+        |    SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS d1
+        |  FROM t GROUP BY cents),
+        |c AS (SELECT cents,
+        |    SUM(d0) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS c0,
+        |    SUM(d1) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS c1
+        |  FROM v),
+        |n AS (SELECT SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS n0,
+        |    SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n1 FROM t)
+        |SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
+        |  CAST(MAX(ABS(c0 * n1 - c1 * n0)) AS BIGINT) AS d_num,
+        |  CAST(MAX(ABS(c0 * n1 - c1 * n0)) * 1000 // (n0 * n1) AS BIGINT) AS d_milli,
+        |  (CAST(MAX(ABS(c0 * n1 - c1 * n0)) AS HUGEINT)
+        |     * MAX(ABS(c0 * n1 - c1 * n0)) * 1000000
+        |   > CAST(1844164 AS HUGEINT) * (n0 + n1) * n0 * n1) AS reject_95
+        |FROM c, n GROUP BY n0, n1""".stripMargin),
 
     // Cliff's delta — the nonparametric effect size beside the
     // mann-whitney TEST (significance says "different"; delta says "by
@@ -354,7 +376,7 @@ object Round12Ops extends Family {
     // Σ nA(v)·cumB(<v). Exact sign-safe milli; Romano's magnitude bands
     // as integer literals (|δ| < 147 negligible, < 330 small, < 474
     // medium, else large).
-    "agg_cliffs_delta" -> ((s, d) => {
+    Op("agg_cliffs_delta", (s, d) => {
       val t = Tables.events(s, d)
         .where(col("event_type").isin("view", "purchase"))
         .select(expr("CAST(FLOOR(value * 100) AS BIGINT)").as("cents"),
@@ -392,7 +414,33 @@ object Round12Ops extends Family {
             |     WHEN abs(delta_milli) < 330 THEN 'small'
             |     WHEN abs(delta_milli) < 474 THEN 'medium'
             |     ELSE 'large' END""".stripMargin))
-    }),
+    },
+      // Same rollup-plus-cumulative construction; sign-safe magnitude DIV.
+      """WITH t AS (SELECT CAST(FLOOR(value * 100) AS BIGINT) AS cents, event_type
+        |  FROM events WHERE event_type IN ('view', 'purchase')),
+        |v AS (SELECT cents,
+        |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS na,
+        |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS nb
+        |  FROM t GROUP BY cents),
+        |c AS (SELECT cents, na, nb,
+        |    COALESCE(SUM(nb) OVER (ORDER BY cents
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS b_below,
+        |    COALESCE(SUM(nb) OVER (ORDER BY cents
+        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 0) AS b_above
+        |  FROM v),
+        |a AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a, CAST(SUM(nb) AS BIGINT) AS n_b,
+        |    CAST(SUM(na * b_below) AS BIGINT) AS gt,
+        |    CAST(SUM(na * b_above) AS BIGINT) AS lt FROM c),
+        |dm AS (SELECT n_a, n_b, gt, lt,
+        |    CAST(CASE WHEN gt >= lt THEN (gt - lt) * 1000 // (n_a * n_b)
+        |         ELSE -((lt - gt) * 1000 // (n_a * n_b)) END AS BIGINT) AS delta_milli
+        |  FROM a)
+        |SELECT n_a, n_b, gt, lt, delta_milli,
+        |  CASE WHEN ABS(delta_milli) < 147 THEN 'negligible'
+        |       WHEN ABS(delta_milli) < 330 THEN 'small'
+        |       WHEN ABS(delta_milli) < 474 THEN 'medium'
+        |       ELSE 'large' END AS magnitude
+        |FROM dm""".stripMargin),
 
     // Eval-set decontamination — the n-gram overlap screen every
     // training-corpus release runs against its benchmark suite (a train
@@ -406,7 +454,7 @@ object Round12Ops extends Family {
     // pairwise), contaminated = any shared gram; headline in exact ppm
     // over the train count. The planted excerpts are exactly what it
     // must recover.
-    "llm_decontam_ngram" -> ((s, d) => {
+    Op("llm_decontam_ngram", (s, d) => {
       val base = Tables.documents(s, d)
       val evalDocs = base.where(col("doc_id") % 31 === 7)
         .join(base.select((col("doc_id") + 1).as("doc_id"),
@@ -436,7 +484,36 @@ object Round12Ops extends Family {
         .select(col("n_train"), col("n_eval"), col("n_contaminated"),
           col("shared_gram_pairs"),
           expr("(n_contaminated * 1000000) DIV n_train").as("contam_ppm"))
-    }),
+    },
+      // Same excerpt plant (eval slots ≡7 mod 62 carry tokens 5..24 of
+      // the neighbor), same 8-token md5 shingles, same hash equijoin.
+      """WITH evd AS (
+        |  SELECT e.doc_id,
+        |    CASE WHEN e.doc_id % 62 = 7 AND p.text IS NOT NULL
+        |              AND len(string_split(p.text, ' ')) >= 24
+        |         THEN array_to_string(string_split(p.text, ' ')[5:24], ' ')
+        |         ELSE e.text END AS text
+        |  FROM documents e LEFT JOIN documents p ON p.doc_id = e.doc_id - 1
+        |  WHERE e.doc_id % 31 = 7),
+        |trd AS (SELECT doc_id, text FROM documents WHERE doc_id % 31 <> 7),
+        |sht AS (SELECT doc_id AS train_id, unnest(list_distinct(list_transform(
+        |         generate_series(1, len(string_split(text, ' ')) - 7),
+        |         i -> md5(array_to_string(string_split(text, ' ')[i:i+7], ' '))))) AS g
+        |       FROM trd WHERE len(string_split(text, ' ')) > 7),
+        |she AS (SELECT doc_id AS eval_id, unnest(list_distinct(list_transform(
+        |         generate_series(1, len(string_split(text, ' ')) - 7),
+        |         i -> md5(array_to_string(string_split(text, ' ')[i:i+7], ' '))))) AS g
+        |       FROM evd WHERE len(string_split(text, ' ')) > 7),
+        |hits AS (SELECT train_id, COUNT(*) AS shared_grams
+        |  FROM sht JOIN she USING (g) GROUP BY train_id),
+        |agg AS (SELECT COUNT(*) AS n_c, COALESCE(SUM(shared_grams), 0) AS sgp FROM hits),
+        |nt AS (SELECT COUNT(*) AS n_train FROM trd),
+        |ne AS (SELECT COUNT(*) AS n_eval FROM evd)
+        |SELECT CAST(n_train AS BIGINT) AS n_train, CAST(n_eval AS BIGINT) AS n_eval,
+        |  CAST(n_c AS BIGINT) AS n_contaminated,
+        |  CAST(sgp AS BIGINT) AS shared_gram_pairs,
+        |  CAST((n_c * 1000000) // n_train AS BIGINT) AS contam_ppm
+        |FROM agg, nt, ne""".stripMargin),
 
     // Arc price elasticity of demand per brand — the pricing-analytics
     // classic, midpoint form, between the 1995–1998-05 and post-1998-06
@@ -446,7 +523,7 @@ object Round12Ops extends Family {
     // integers end to end (DECIMAL(38,0): cents·qty² passes int64),
     // sign-safe milli DIV (magnitude then negate). Inelastic-band
     // verdict |e| < 1000 milli. One fact rollup per (brand, half).
-    "agg_arc_elasticity" -> ((s, d) => {
+    Op("agg_arc_elasticity", (s, d) => {
       val t = Tables.lineitem(s, d)
         .join(broadcast(Tables.part(s, d).select("p_partkey", "p_brand")),
           col("l_partkey") === col("p_partkey"))
@@ -476,7 +553,31 @@ object Round12Ops extends Family {
             .as("elasticity_milli"))
         .withColumn("inelastic", abs(col("elasticity_milli")) < 1000L)
         .orderBy("p_brand")
-    }),
+    },
+      // Same cross-multiplied midpoint form in HUGEINT.
+      """WITH t AS (
+        |  SELECT p_brand,
+        |    CASE WHEN l_shipdate < DATE '1998-06-01' THEN 1 ELSE 2 END AS half,
+        |    CAST(l_quantity AS BIGINT) AS q,
+        |    CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS c
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
+        |a AS (SELECT p_brand, half, CAST(SUM(q) AS BIGINT) AS q,
+        |    CAST(SUM(c) AS BIGINT) AS c FROM t GROUP BY 1, 2),
+        |j AS (SELECT h1.p_brand, h1.q AS q1, h2.q AS q2,
+        |    CAST(h1.c AS HUGEINT) * h2.q + CAST(h2.c AS HUGEINT) * h1.q AS p_sum_num,
+        |    CAST(h2.c AS HUGEINT) * h1.q - CAST(h1.c AS HUGEINT) * h2.q AS p_diff_num
+        |  FROM a h1 JOIN a h2 ON h1.p_brand = h2.p_brand
+        |  WHERE h1.half = 1 AND h2.half = 2)
+        |SELECT p_brand, q1, q2,
+        |  CAST((CASE WHEN (q2 - q1) * p_sum_num >= 0
+        |        THEN ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)
+        |        ELSE -(ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)) END)
+        |    * (CASE WHEN p_diff_num < 0 THEN -1 ELSE 1 END) AS BIGINT) AS elasticity_milli,
+        |  ABS(CAST((CASE WHEN (q2 - q1) * p_sum_num >= 0
+        |        THEN ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)
+        |        ELSE -(ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)) END)
+        |    * (CASE WHEN p_diff_num < 0 THEN -1 ELSE 1 END) AS BIGINT)) < 1000 AS inelastic
+        |FROM j WHERE p_diff_num <> 0 ORDER BY p_brand""".stripMargin),
 
     // Vortex indicator — the trend-reversal oscillator beside win_atr
     // (same daily OHLC synthesis law: exact cents, per event type):
@@ -485,7 +586,7 @@ object Round12Ops extends Family {
     // summed over a trailing 14-day frame, VI± in exact milli DIVs.
     // Crossover signal VI+ > VI−. Two lag columns + three frame sums
     // over one (type, day) exchange; days are bounded, types parallel.
-    "win_vortex" -> ((s, d) => {
+    Op("win_vortex", (s, d) => {
       val daily = Tables.events(s, d)
         .select(col("event_type"), expr("CAST(ts_us DIV 86400000000 AS BIGINT)").as("day"),
           expr("CAST(FLOOR(value * 100) AS BIGINT)").as("cents"),
@@ -522,7 +623,38 @@ object Round12Ops extends Family {
         .withColumn("uptrend", col("vi_plus_milli") > col("vi_minus_milli"))
         .where(col("day") % 5 === 0)
         .orderBy("event_type", "day")
-    }),
+    },
+      // Same OHLC synthesis (close = value at the max composite
+      // µs·10⁶+id key), same 14-frame sums and milli DIVs.
+      """WITH e AS (SELECT event_type,
+        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
+        |    epoch_us(ts) AS ts_us, event_id
+        |  FROM events),
+        |daily AS (SELECT event_type, day, MAX(cents) AS high, MIN(cents) AS low,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS close
+        |  FROM e GROUP BY 1, 2),
+        |lagd AS (SELECT event_type, day, high, low, close,
+        |    LAG(low) OVER w AS prev_low, LAG(high) OVER w AS prev_high,
+        |    LAG(close) OVER w AS prev_close
+        |  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
+        |vm AS (SELECT event_type, day,
+        |    ABS(high - prev_low) AS vm_plus, ABS(low - prev_high) AS vm_minus,
+        |    GREATEST(high - low, ABS(high - prev_close), ABS(low - prev_close)) AS tr
+        |  FROM lagd WHERE prev_low IS NOT NULL),
+        |fr AS (SELECT event_type, day,
+        |    ROW_NUMBER() OVER w AS rn,
+        |    SUM(vm_plus) OVER f AS svp, SUM(vm_minus) OVER f AS svm,
+        |    SUM(tr) OVER f AS str
+        |  FROM vm WINDOW
+        |    w AS (PARTITION BY event_type ORDER BY day),
+        |    f AS (PARTITION BY event_type ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
+        |SELECT event_type, day,
+        |  CAST((svp * 1000) // str AS BIGINT) AS vi_plus_milli,
+        |  CAST((svm * 1000) // str AS BIGINT) AS vi_minus_milli,
+        |  (svp * 1000) // str > (svm * 1000) // str AS uptrend
+        |FROM fr WHERE rn >= 14 AND str > 0 AND day % 5 = 0
+        |ORDER BY event_type, day""".stripMargin),
 
     // Mood's median test — "do the k groups share a median?" without any
     // normality assumption: the grand LOWER median of exact cents found
@@ -531,7 +663,7 @@ object Round12Ops extends Family {
     // χ² compare against the df=4 critical value with every quotient
     // DECLARED: term_g = (a_g·N − n_g·A)² DIV n_g (truncation identical
     // in both engines), reject iff Σterm > (9488·A·B) DIV 1000.
-    "agg_mood_median" -> ((s, d) => {
+    Op("agg_mood_median", (s, d) => {
       val t = Tables.orders(s, d).select(
         expr("CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)").as("cents"),
         col("o_orderpriority").as("grp"))
@@ -569,7 +701,27 @@ object Round12Ops extends Family {
           // 9488·A·B (9.488 as an exact integer literal)
           expr("CAST(stat_num AS DECIMAL(38,0)) * 1000 > CAST(9488 AS DECIMAL(38,0)) * aa * (nn - aa)")
             .as("reject_95"))
-    }),
+    },
+      // Same exact-median split, same declared per-term truncation.
+      """WITH t AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS cents,
+        |    o_orderpriority AS grp FROM orders),
+        |v AS (SELECT cents, COUNT(*) AS n FROM t GROUP BY cents),
+        |c AS (SELECT cents, SUM(n) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS cum FROM v),
+        |nn0 AS (SELECT COUNT(*) AS nn FROM t),
+        |med AS (SELECT MIN(cents) AS median_cents FROM c, nn0 WHERE cum >= (nn + 1) // 2),
+        |cnt AS (SELECT grp, COUNT(*) AS n_g,
+        |    SUM(CASE WHEN cents > median_cents THEN 1 ELSE 0 END) AS a_g
+        |  FROM t, med GROUP BY grp),
+        |tot AS (SELECT CAST(SUM(n_g) AS BIGINT) AS nn, CAST(SUM(a_g) AS BIGINT) AS aa FROM cnt),
+        |terms AS (SELECT
+        |    (CAST(a_g AS HUGEINT) * nn - CAST(n_g AS HUGEINT) * aa)
+        |      * (CAST(a_g AS HUGEINT) * nn - CAST(n_g AS HUGEINT) * aa) // n_g AS term,
+        |    nn, aa
+        |  FROM cnt, tot)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS k_groups, nn AS n_total, aa AS n_above,
+        |  CAST(SUM(term) AS BIGINT) AS stat_num,
+        |  CAST(SUM(term) AS HUGEINT) * 1000 > CAST(9488 AS HUGEINT) * aa * (nn - aa) AS reject_95
+        |FROM terms GROUP BY nn, aa""".stripMargin),
 
     // Mann–Kendall trend test + Sen slope — the nonparametric trend pair
     // every monitoring stack wants on a daily KPI: S = Σ sign pairs over
@@ -578,7 +730,7 @@ object Round12Ops extends Family {
     // |S|−1 squared against 1.96²·Var cross-multiplied, and Sen slope =
     // lower-median of per-pair micro-slopes (each pair's Δcents·10⁶ DIV
     // Δday — a DECLARED truncation, identical in both engines).
-    "agg_mann_kendall" -> ((s, d) => {
+    Op("agg_mann_kendall", (s, d) => {
       val daily = Tables.events(s, d)
         .select(col("event_type"),
           expr("CAST(ts_us DIV 86400000000 AS BIGINT)").as("day"),
@@ -616,7 +768,44 @@ object Round12Ops extends Family {
                  |       > 38416 * var_num THEN 'decreasing'
                  |     ELSE 'none' END""".stripMargin).as("trend"))
         .orderBy("event_type")
-    }),
+    },
+      // Same bounded-day pair sweep, tie-corrected variance, squared
+      // z-compare, and lower-median Sen slope with the declared per-pair
+      // micro truncation.
+      """WITH e AS (SELECT event_type, CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |daily AS (SELECT event_type, day, CAST(SUM(cents) AS BIGINT) AS v
+        |  FROM e GROUP BY 1, 2),
+        |pairs AS (SELECT x.event_type, y.day - x.day AS dd, y.v - x.v AS dv
+        |  FROM daily x JOIN daily y
+        |    ON x.event_type = y.event_type AND x.day < y.day),
+        |sv AS (SELECT event_type, CAST(SUM(SIGN(dv)) AS BIGINT) AS s_stat
+        |  FROM pairs GROUP BY 1),
+        |nd AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM daily GROUP BY 1),
+        |ties AS (SELECT event_type,
+        |    CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_num
+        |  FROM (SELECT event_type, v, COUNT(*) AS t FROM daily GROUP BY 1, 2)
+        |  GROUP BY 1),
+        |sl AS (SELECT event_type,
+        |    CASE WHEN dv >= 0 THEN (dv * 1000000) // dd
+        |         ELSE -((-dv * 1000000) // dd) END AS slope_micro, dd, dv
+        |  FROM pairs),
+        |sen AS (SELECT event_type, slope_micro AS sen_slope_micro FROM (
+        |    SELECT event_type, slope_micro,
+        |      ROW_NUMBER() OVER (PARTITION BY event_type
+        |        ORDER BY slope_micro, dd, dv) AS rn,
+        |      COUNT(*) OVER (PARTITION BY event_type) AS np
+        |    FROM sl) WHERE rn = (np + 1) // 2)
+        |SELECT nd.event_type, n AS n_days, s_stat,
+        |  n * (n - 1) * (2 * n + 5) - tie_num AS var_num, sen_slope_micro,
+        |  CASE WHEN s_stat > 0 AND (s_stat - 1) * (s_stat - 1) * 18 * 10000
+        |         > 38416 * (n * (n - 1) * (2 * n + 5) - tie_num) THEN 'increasing'
+        |       WHEN s_stat < 0 AND (s_stat + 1) * (s_stat + 1) * 18 * 10000
+        |         > 38416 * (n * (n - 1) * (2 * n + 5) - tie_num) THEN 'decreasing'
+        |       ELSE 'none' END AS trend
+        |FROM nd JOIN sv USING (event_type) JOIN ties USING (event_type)
+        |  JOIN sen USING (event_type)
+        |ORDER BY event_type""".stripMargin),
 
     // Somers' D — the ASYMMETRIC ordinal association (Kendall τ's
     // directional sibling; the standard effect size for "does priority
@@ -625,7 +814,7 @@ object Round12Ops extends Family {
     // corpus), X = priority digit, Y = exact cents; D_y|x = (C−D)/(n0 −
     // ties_x) and D_x|y = (C−D)/(n0 − ties_y), both sign-safe exact
     // milli.
-    "agg_somers_d" -> ((s, d) => {
+    Op("agg_somers_d", (s, d) => {
       val t = Tables.orders(s, d).where(col("o_orderkey") % 100 === 7)
         .select(col("o_orderkey").as("k"),
           substring(col("o_orderpriority"), 1, 1).cast("bigint").as("x"),
@@ -647,7 +836,24 @@ object Round12Ops extends Family {
           expr("""CAST(IF(nc >= nd, ((nc - nd) * 1000) DIV (n0 - ty),
                  |  -(((nd - nc) * 1000) DIV (n0 - ty))) AS BIGINT)""".stripMargin)
             .as("d_xy_milli"))
-    }),
+    },
+      // Same 1-in-100 sample and pairwise counts, both direction DIVs.
+      """WITH t AS (SELECT o_orderkey AS k,
+        |    CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS x,
+        |    CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS y
+        |  FROM orders WHERE o_orderkey % 100 = 7),
+        |p AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
+        |    CAST(SUM(CASE WHEN (a.x - b.x) * (a.y - b.y) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
+        |    CAST(SUM(CASE WHEN (a.x - b.x) * (a.y - b.y) < 0 THEN 1 ELSE 0 END) AS BIGINT) AS nd,
+        |    CAST(SUM(CASE WHEN a.x = b.x THEN 1 ELSE 0 END) AS BIGINT) AS tx,
+        |    CAST(SUM(CASE WHEN a.y = b.y THEN 1 ELSE 0 END) AS BIGINT) AS ty
+        |  FROM t a JOIN t b ON a.k < b.k)
+        |SELECT n0, nc, nd, tx, ty,
+        |  CAST(CASE WHEN nc >= nd THEN ((nc - nd) * 1000) // (n0 - tx)
+        |       ELSE -(((nd - nc) * 1000) // (n0 - tx)) END AS BIGINT) AS d_yx_milli,
+        |  CAST(CASE WHEN nc >= nd THEN ((nc - nd) * 1000) // (n0 - ty)
+        |       ELSE -(((nd - nc) * 1000) // (n0 - ty)) END AS BIGINT) AS d_xy_milli
+        |FROM p""".stripMargin),
 
     // Krippendorff's alpha (nominal) — the chance-corrected agreement
     // coefficient that, unlike Fleiss' κ beside it, is THE standard when
@@ -656,7 +862,7 @@ object Round12Ops extends Family {
     // Do = mismatched rater pairs / 3n, De from the pooled coincidence
     // frequencies with the small-sample N(N−1) denominator, α in exact
     // ppm via ONE cross-multiplied DIV.
-    "agg_krippendorff_alpha" -> ((s, d) => {
+    Op("agg_krippendorff_alpha", (s, d) => {
       val codes = Tables.documents(s, d).where(col("doc_id") % 11 === 0)
         .select(col("doc_id"), explode(expr("sequence(0, 2)")).as("r"))
         .withColumn("code", expr(
@@ -676,7 +882,22 @@ object Round12Ops extends Family {
           expr("""CAST(1000000 - (mismatch * nn * (nn - 1) * 1000000)
                  | DIV (pairs * (nn * nn - sq)) AS BIGINT)""".stripMargin)
             .as("alpha_ppm"))
-    }),
+    },
+      // Same planted 80%-agreement raters, same Do/De cross-multiplied α.
+      s"""WITH codes AS (SELECT doc_id, CAST(i AS BIGINT) AS r,
+        |    CASE WHEN ${duckMd5Bits("'kn:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 8)} % 10 < 8
+        |      THEN ${duckMd5Bits("'kb:' || CAST(doc_id AS VARCHAR) || ':b'", 8)} % 4
+        |      ELSE ${duckMd5Bits("'kc:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 8)} % 4 END AS code
+        |  FROM documents, generate_series(0, 2) t(i) WHERE doc_id % 11 = 0),
+        |m AS (SELECT CAST(SUM(CASE WHEN p.code <> q.code THEN 1 ELSE 0 END) AS BIGINT) AS mismatch,
+        |    CAST(COUNT(*) AS BIGINT) AS pairs
+        |  FROM codes p JOIN codes q ON p.doc_id = q.doc_id AND p.r < q.r),
+        |f AS (SELECT CAST(SUM(nk) AS BIGINT) AS nn, CAST(SUM(nk * nk) AS BIGINT) AS sq
+        |  FROM (SELECT code, COUNT(*) AS nk FROM codes GROUP BY code))
+        |SELECT mismatch, pairs, nn AS n_values, nn * nn - sq AS de_num,
+        |  CAST(1000000 - (mismatch * nn * (nn - 1) * 1000000)
+        |    // (pairs * (nn * nn - sq)) AS BIGINT) AS alpha_ppm
+        |FROM m, f""".stripMargin),
 
     // Nelson–Aalen cumulative hazard — Kaplan–Meier's hazard-scale twin
     // (KM multiplies survival; NA sums d/n, the estimator a reliability
@@ -684,7 +905,7 @@ object Round12Ops extends Family {
     // = md5 % 90, every 7th user right-censored at half its day), the
     // bounded 90-day axis walked with one cumulative window, each step
     // d·10⁶ DIV n_at_risk a DECLARED truncation summed exactly.
-    "agg_nelson_aalen" -> ((s, d) => {
+    Op("agg_nelson_aalen", (s, d) => {
       val subj = Tables.events(s, d).select("user_id").distinct()
         .withColumn("raw_day", expr(s"${md5Bits("na", "user_id", 8)} % 90 + 1"))
         .withColumn("censored", expr(s"${md5Bits("nc", "user_id", 8)} % 7 = 0"))
@@ -705,7 +926,30 @@ object Round12Ops extends Family {
         .select(col("day"), col("n_risk"), col("d"),
           col("step_micro"), col("hazard_micro"))
         .orderBy("day")
-    }),
+    },
+      // Same synthetic lifetimes, same declared per-step micro truncation.
+      s"""WITH subj AS (SELECT user_id,
+        |    ${duckMd5Bits("na", "user_id", 8)} % 90 + 1 AS raw_day,
+        |    ${duckMd5Bits("nc", "user_id", 8)} % 7 = 0 AS censored
+        |  FROM (SELECT DISTINCT user_id FROM events)),
+        |s2 AS (SELECT user_id, censored,
+        |    CASE WHEN censored THEN raw_day // 2 + 1 ELSE raw_day END AS day FROM subj),
+        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM s2),
+        |bd AS (SELECT day,
+        |    CAST(SUM(CASE WHEN NOT censored THEN 1 ELSE 0 END) AS BIGINT) AS d,
+        |    CAST(COUNT(*) AS BIGINT) AS leaving
+        |  FROM s2 GROUP BY day),
+        |r AS (SELECT day, d, leaving,
+        |    n_total - COALESCE(SUM(leaving) OVER (ORDER BY day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
+        |  FROM bd, tot),
+        |st AS (SELECT day, n_risk, d, (d * 1000000) // n_risk AS step_micro
+        |  FROM r WHERE d > 0)
+        |SELECT day, CAST(n_risk AS BIGINT) AS n_risk, d,
+        |  CAST(step_micro AS BIGINT) AS step_micro,
+        |  CAST(SUM(step_micro) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT)
+        |    AS hazard_micro
+        |FROM st ORDER BY day""".stripMargin),
 
     // Economic order quantity per brand — the inventory-planning classic
     // off the demand rollup: EOQ = √(2DS/H) with the quotient 2DS DIV H
@@ -713,7 +957,7 @@ object Round12Ops extends Family {
     // jarque-bera one-sqrt law; the integer stays < 2⁵³ so both engines
     // see the identical IEEE value), order cadence and cycle length as
     // declared integer DIVs.
-    "agg_eoq" -> ((s, d) => {
+    Op("agg_eoq", (s, d) => {
       val orderCostCents = 5000L
       val holdCentsPerUnitYear = 250L
       Tables.lineitem(s, d)
@@ -726,7 +970,17 @@ object Round12Ops extends Family {
         .withColumn("orders_per_year", expr("(d_units + eoq_units - 1) DIV eoq_units"))
         .withColumn("cycle_days_milli", expr("(eoq_units * 365000) DIV d_units"))
         .orderBy("p_brand")
-    }),
+    },
+      // Same cleared quotient, one IEEE sqrt, declared cadence DIVs.
+      """WITH a AS (SELECT p_brand, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS d_units
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand),
+        |e AS (SELECT p_brand, d_units,
+        |    CAST(FLOOR(SQRT(CAST((2 * d_units * 5000) // 250 AS DOUBLE))) AS BIGINT) AS eoq_units
+        |  FROM a)
+        |SELECT p_brand, d_units, eoq_units,
+        |  (d_units + eoq_units - 1) // eoq_units AS orders_per_year,
+        |  (eoq_units * 365000) // d_units AS cycle_days_milli
+        |FROM e ORDER BY p_brand""".stripMargin),
 
     // Overlapping-interval coalescing (merge sessions into islands) —
     // the gaps-and-islands SIBLING that merges by OVERLAP, not by gap
@@ -735,7 +989,7 @@ object Round12Ops extends Family {
     // (running MAX of end, exclusive frame), islands counted and their
     // exact µs coverage summed. Per-user windows — fully parallel on
     // the user axis at any scale.
-    "agg_interval_merge" -> ((s, d) => {
+    Op("agg_interval_merge", (s, d) => {
       val iv = Tables.events(s, d).select(col("user_id"),
         col("ts_us").as("start_us"),
         (col("ts_us") + 1800000000L).as("end_us"))
@@ -755,7 +1009,29 @@ object Round12Ops extends Family {
           sum("n_iv").as("n_intervals"),
           count(lit(1)).as("n_islands"),
           sum(expr("e - s")).as("covered_us"))
-    }),
+    },
+      // Same running-max island construction and exact coverage algebra.
+      """WITH iv AS (SELECT user_id, epoch_us(ts) AS start_us,
+        |    epoch_us(ts) + 1800000000 AS end_us FROM events),
+        |isl AS (SELECT user_id, start_us, end_us,
+        |    CASE WHEN MAX(end_us) OVER (PARTITION BY user_id ORDER BY start_us, end_us
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
+        |      OR start_us > MAX(end_us) OVER (PARTITION BY user_id ORDER BY start_us, end_us
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |      THEN 1 ELSE 0 END AS new_island
+        |  FROM iv),
+        |num AS (SELECT user_id, start_us, end_us,
+        |    SUM(new_island) OVER (PARTITION BY user_id ORDER BY start_us, end_us
+        |      ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM isl),
+        |g AS (SELECT user_id, island, COUNT(*) AS n_iv,
+        |    MIN(start_us) AS s, MAX(end_us) AS e
+        |  FROM num GROUP BY 1, 2)
+        |SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+        |  CAST(SUM(n_iv) AS BIGINT) AS n_intervals,
+        |  CAST(COUNT(*) AS BIGINT) AS n_islands,
+        |  CAST(SUM(e - s) AS BIGINT) AS covered_us
+        |FROM g""".stripMargin),
 
     // EXACT repeated-substring dedup (the Lee et al. substring-level
     // family beside the document-level minhash/simhash ops): 12-token
@@ -767,7 +1043,7 @@ object Round12Ops extends Family {
     // merged spans, repeated tokens, repeat ppm of the corpus token
     // mass. Window hashing is one scan + one hash-shuffle; the flagged
     // set is |repeats|-bounded, never pairwise.
-    "llm_dedup_substring" -> ((s, d) => {
+    Op("llm_dedup_substring", (s, d) => {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), split(col("text"), " ").as("t"))
       // single-row-group scan → one task; spread the docs before the
@@ -810,7 +1086,36 @@ object Round12Ops extends Family {
         .withColumn("repeat_ppm",
           expr("(repeated_tokens * 1000000) DIV total_tokens"))
         .orderBy("lang")
-    }),
+    },
+      // Same 12-token windows, ≥2-distinct-doc flag, island merge in
+      // token space, per-language ppm.
+      """WITH dd AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
+        |w AS (SELECT doc_id, lang, CAST(i - 1 AS BIGINT) AS i,
+        |    substring(md5(array_to_string(t[i:i+11], ' ')), 1, 16) AS h
+        |  FROM dd, LATERAL (SELECT unnest(generate_series(1, len(t) - 11)) AS i)
+        |  WHERE len(t) >= 12),
+        |rep AS (SELECT h FROM w GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2),
+        |fl AS (SELECT doc_id, lang, i, i + 11 AS e FROM w JOIN rep USING (h)),
+        |mk AS (SELECT doc_id, lang, i, e,
+        |    MAX(e) OVER (PARTITION BY doc_id ORDER BY i, e
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_e
+        |  FROM fl),
+        |br AS (SELECT doc_id, lang, i, e,
+        |    CASE WHEN max_e IS NULL OR i > max_e + 1 THEN 1 ELSE 0 END AS brk
+        |  FROM mk),
+        |isl AS (SELECT doc_id, lang, i, e,
+        |    SUM(brk) OVER (PARTITION BY doc_id ORDER BY i, e ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM br),
+        |sp AS (SELECT doc_id, lang, island, MIN(i) AS s0, MAX(e) AS e0
+        |  FROM isl GROUP BY 1, 2, 3),
+        |tm AS (SELECT lang, CAST(SUM(len(t)) AS BIGINT) AS total_tokens FROM dd GROUP BY lang)
+        |SELECT sp.lang, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs_affected,
+        |  CAST(COUNT(*) AS BIGINT) AS n_spans,
+        |  CAST(SUM(e0 - s0 + 1) AS BIGINT) AS repeated_tokens,
+        |  total_tokens,
+        |  CAST((SUM(e0 - s0 + 1) * 1000000) // total_tokens AS BIGINT) AS repeat_ppm
+        |FROM sp JOIN tm ON sp.lang = tm.lang
+        |GROUP BY sp.lang, total_tokens ORDER BY sp.lang""".stripMargin),
 
     // Domain-mix reweighting by multiplicative weights — the DoReMi-
     // shaped loop that tilts the training mix toward domains with
@@ -822,7 +1127,7 @@ object Round12Ops extends Family {
     // oracle), final share in exact ppm of the summed weights. Constant
     // domain count → the whole op is a 5-row rollup at any corpus
     // scale.
-    "llm_domain_mix_mw" -> ((s, d) => {
+    Op("llm_domain_mix_mw", (s, d) => {
       def loss(t: Int) =
         s"(${md5Bits(s"concat('mw:', lang, ':', '$t')", 8)} % 400)"
       val domains = Tables.documents(s, d).groupBy("lang")
@@ -836,7 +1141,22 @@ object Round12Ops extends Family {
         .select(col("lang"), col("n_docs"), col("w"),
           expr("(w * 1000000) DIV w_total").as("share_ppm"))
         .orderBy("lang")
-    }),
+    },
+      // Same unrolled per-step truncation, same ppm share.
+      s"""WITH d0 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang),
+        |st AS (SELECT lang, n_docs,
+        |  ((((((((((1000000
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '0'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '1'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '2'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '3'", 8)} % 400)) // 1000)
+        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '4'", 8)} % 400)) // 1000)
+        |    AS w
+        |  FROM d0),
+        |tt AS (SELECT CAST(SUM(w) AS BIGINT) AS w_total FROM st)
+        |SELECT lang, n_docs, CAST(w AS BIGINT) AS w,
+        |  CAST((w * 1000000) // w_total AS BIGINT) AS share_ppm
+        |FROM st, tt ORDER BY lang""".stripMargin),
 
     // Largest-remainder apportionment — the exact-integer allocation
     // every budget/sampling planner needs (seats ≡ sampling slots ≡
@@ -845,7 +1165,7 @@ object Round12Ops extends Family {
     // ASC) hands out the leftover slots, Σ = 100 exactly by
     // construction (the property round-off proportional allocation
     // always violates).
-    "agg_apportionment" -> ((s, d) => {
+    Op("agg_apportionment", (s, d) => {
       val rev = Tables.orders(s, d)
         .join(Tables.customer(s, d).select("c_custkey", "c_nationkey"),
           col("o_custkey") === col("c_custkey"))
@@ -867,7 +1187,24 @@ object Round12Ops extends Family {
           expr("base + IF(rk <= 100 - base_sum, 1, 0)"))
         .select(col("region"), col("cents"), col("base"), col("seats"))
         .orderBy("region")
-    }),
+    },
+      // Same floor quotas and remainder ranking; Σseats = 100 exactly.
+      """WITH rev AS (SELECT CAST(n_regionkey AS BIGINT) AS region,
+        |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS cents
+        |  FROM orders
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  GROUP BY 1),
+        |t AS (SELECT CAST(SUM(cents) AS BIGINT) AS total FROM rev),
+        |b AS (SELECT region, cents,
+        |    (cents * 100) // total AS base, (cents * 100) % total AS rem
+        |  FROM rev, t),
+        |bs AS (SELECT CAST(SUM(base) AS BIGINT) AS base_sum FROM b),
+        |r AS (SELECT region, cents, base, rem,
+        |    ROW_NUMBER() OVER (ORDER BY rem DESC, region) AS rk FROM b)
+        |SELECT region, cents, CAST(base AS BIGINT) AS base,
+        |  CAST(base + (CASE WHEN rk <= 100 - base_sum THEN 1 ELSE 0 END) AS BIGINT) AS seats
+        |FROM r, bs ORDER BY region""".stripMargin),
 
     // Rate-limited deterministic streaming source — the non-file,
     // non-memory SOURCE surface (rate-micro-batch: fixed rowsPerBatch,
@@ -876,7 +1213,7 @@ object Round12Ops extends Family {
     // batches 0 and 1 land via foreachBatch (later batches ignored by
     // the batch-id guard), giving values 0..99 at two known
     // timestamps; graded rollup = per-second value count + exact sum.
-    "stream_rate_source" -> ((s, d) => {
+    Op("stream_rate_source", (s, d) => {
       val got = new java.util.concurrent.atomic.AtomicLong(0)
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
       val q = s.readStream.format("rate-micro-batch")
@@ -905,7 +1242,13 @@ object Round12Ops extends Family {
         .groupBy((col("ts_ms") / 1000).cast("bigint").as("second"))
         .agg(count(lit(1)).as("n"), sum("value").as("value_sum"))
         .orderBy("second")
-    }),
+    },
+      // Golden: batches 0 and 1 of the pinned rate source — 50 values per
+      // batch, one second apart, value ranges 0..49 / 50..99.
+      """SELECT CAST(second AS BIGINT) AS second, CAST(n AS BIGINT) AS n,
+        |  CAST(value_sum AS BIGINT) AS value_sum
+        |FROM (VALUES (0, 50, 1225), (1, 50, 3725)) AS t(second, n, value_sum)
+        |ORDER BY second""".stripMargin),
 
     // Activation-checkpointing plan — the √L memory/recompute tradeoff
     // every training stack sizes before a run: for each model config
@@ -915,7 +1258,7 @@ object Round12Ops extends Family {
     // L·A to (ceil(L/k)+k)·A while backward re-runs the L−k
     // non-boundary forwards (overhead over the 3L fwd+bwd baseline).
     // All exact integers; constant config table at any scale.
-    "llm_act_ckpt_plan" -> ((s, d) => {
+    Op("llm_act_ckpt_plan", (s, d) => {
       val cfg = s.createDataFrame(Seq(
         ("125m", 12L, 768L), ("1b", 24L, 2048L), ("7b", 32L, 4096L),
         ("30b", 48L, 6144L), ("70b", 80L, 8192L)))
@@ -937,7 +1280,24 @@ object Round12Ops extends Family {
           "mem_no_ckpt_mb", "mem_ckpt_mb", "mem_save_ppm",
           "recompute_overhead_ppm")
         .orderBy("layers")
-    }),
+    },
+      // Same config ladder and integer plan arithmetic.
+      """WITH cfg AS (SELECT * FROM (VALUES
+        |    ('125m', 12, 768), ('1b', 24, 2048), ('7b', 32, 4096),
+        |    ('30b', 48, 6144), ('70b', 80, 8192)) AS t(model, layers, hidden)),
+        |p AS (SELECT model, CAST(layers AS BIGINT) AS layers,
+        |    CAST(hidden AS BIGINT) AS hidden,
+        |    14 * 4096 * 8 * CAST(hidden AS BIGINT) * 2 AS a,
+        |    CAST(FLOOR(SQRT(CAST(layers AS DOUBLE))) AS BIGINT) AS k
+        |  FROM cfg),
+        |m AS (SELECT model, layers, hidden, k AS k_segments,
+        |    (layers * a) // 1048576 AS mem_no_ckpt_mb,
+        |    (((layers + k - 1) // k + k) * a) // 1048576 AS mem_ckpt_mb
+        |  FROM p)
+        |SELECT model, layers, hidden, k_segments, mem_no_ckpt_mb, mem_ckpt_mb,
+        |  ((mem_no_ckpt_mb - mem_ckpt_mb) * 1000000) // mem_no_ckpt_mb AS mem_save_ppm,
+        |  ((layers - k_segments) * 1000000) // (3 * layers) AS recompute_overhead_ppm
+        |FROM m ORDER BY layers""".stripMargin),
 
     // ULID encode/decode roundtrip — the sortable-id surface (48-bit ms
     // timestamp + 80-bit randomness, Crockford base32): digits computed
@@ -947,7 +1307,7 @@ object Round12Ops extends Family {
     // arithmetic, roundtrip graded row-by-row; ORDER BY the ULID string
     // itself exercises the lexicographic-equals-chronological property
     // the format exists for.
-    "fn_ulid_roundtrip" -> ((s, d) => {
+    Op("fn_ulid_roundtrip", (s, d) => {
       val alpha = "0123456789ABCDEFGHJKMNPQRSTVWXYZ"
       def dig(src: String, k: Int) =
         s"substring('$alpha', CAST(($src DIV ${math.pow(32, k).toLong}) % 32 AS INT) + 1, 1)"
@@ -972,7 +1332,9 @@ object Round12Ops extends Family {
           expr("ts_ms_decoded = ts_ms AND r1_decoded = r1"))
         .select("event_id", "ulid", "ts_ms", "ts_ms_decoded", "roundtrip_ok")
         .orderBy("ulid", "event_id")
-    }),
+    },
+      // Same three-piece base32 arithmetic, same Crockford alphabet.
+      UlidOracle.sql),
 
     // Renko brick chart — the noise-filtering price transform (a brick
     // lays only when price crosses a full grid level, so chop inside a
@@ -980,7 +1342,7 @@ object Round12Ops extends Family {
     // |Δlevel| per day split by direction, reversals counted where the
     // direction flips. Lag windows per event type over the bounded day
     // axis; exact integers end to end.
-    "win_renko" -> ((s, d) => {
+    Op("win_renko", (s, d) => {
       val daily = Tables.events(s, d)
         .select(col("event_type"),
           expr("CAST(ts_us DIV 86400000000 AS BIGINT)").as("day"),
@@ -1005,617 +1367,9 @@ object Round12Ops extends Family {
             && col("prev_dir") =!= 0 && col("dir") =!= col("prev_dir"), 1L)
             .otherwise(0L)).as("n_reversals"))
         .orderBy("event_type")
-    }),
-
-    // Hive ACID MAJOR COMPACTION — the maintenance half of
-    // source_hive_acid_read's lifecycle: fold base + insert deltas +
-    // delete deltas into ONE new base (base_0000003, flattened row ids
-    // re-stamped under the compacting transaction) and prove the
-    // compacted table serves EXACTLY the merged state the MOR read
-    // produced — same oracle, different physical layout. The graded
-    // read touches only the new base (delta dirs ignored by the
-    // compaction watermark); at 100 TB this is the nightly job that
-    // keeps MOR read amplification bounded.
-    "sink_hive_acid_compact" -> ((s, d) => {
-      // ensure the MOR layout exists (shares the staging with the read op)
-      queries("source_hive_acid_read")(s, d).count()
-      val root = Scratch.opDir("hive_acid", d)
-      val rootP = java.nio.file.Paths.get(root)
-      withConfs(s)("spark.sql.orc.impl" -> "hive") {
-        if (!java.nio.file.Files.exists(rootP.resolve("_COMPACTED"))) {
-          val dirs = java.nio.file.Files.list(rootP).iterator().asScala
-            .map(_.getFileName.toString).toSeq.sorted
-          val live = dirs.filter(n => n.startsWith("base_") || n.startsWith("delta_"))
-            .filterNot(_ == "base_0000003")
-          val dels = dirs.filter(_.startsWith("delete_delta_"))
-          val rows = live.map(n => s.read.orc(s"$root/$n")).reduce(_ unionByName _)
-          val deleted = dels.map(n => s.read.orc(s"$root/$n")).reduce(_ unionByName _)
-            .select("originalTransaction", "bucket", "rowId")
-          // Row identity must stay UNIQUE under the compacting txn: rows
-          // from base_0000001 and delta_0000002 can share (bucket, rowId),
-          // so re-stamping originalTransaction=3 while keeping the old
-          // rowId would collide the ACID identity and corrupt any future
-          // delete-delta against the new base. Re-number rowId per bucket
-          // over the deterministic (originalTransaction, rowId) order.
-          val wC = Window.partitionBy("bucket")
-            .orderBy("originalTransaction", "rowId")
-          rows.join(deleted, Seq("originalTransaction", "bucket", "rowId"), "left_anti")
-            .select(lit(0).as("operation"),
-              lit(3L).as("originalTransaction"),
-              col("bucket"),
-              (row_number().over(wC) - 1).cast("bigint").as("rowId"),
-              lit(3L).as("currentTransaction"), col("row"))
-            .write.mode("overwrite").orc(s"$root/base_0000003")
-          java.nio.file.Files.createFile(rootP.resolve("_COMPACTED"))
-        }
-        // the graded read: new base only, no merge work left
-        s.read.orc(s"$root/base_0000003")
-          .select(col("row.o_orderstatus").as("o_orderstatus"),
-            col("row.o_totalprice").as("o_totalprice"))
-          .groupBy("o_orderstatus")
-          .agg(count(lit(1)).as("n_orders"),
-            sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
-          .orderBy("o_orderstatus")
-          .localCheckpoint()
-      }
-    }),
-
-    // Lexicon screening — the blocklist-join content filter every
-    // curation pipeline runs (toxicity/PII-keyword/spam lexicons are
-    // all this op with different term lists; the lexicon here is the
-    // md5-derived pseudo-list `token % 97 == 13`, which keeps the
-    // fixture clean while exercising the real shape): corpus tokens
-    // exploded once, the bounded lexicon BROADCAST to the scan, hits
-    // per mille of each doc's token mass, flag at >30‰. Per-language
-    // rollup; the explode-join is the only data-scaled work.
-    "llm_toxicity_lexicon" -> ((s, d) => {
-      val toks = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
-      val flagged = toks.withColumn("hit", expr(
-        s"IF(${md5Bits("concat('lex:', w)", 8)} % 97 = 13, 1, 0)"))
-      flagged.groupBy("doc_id", "lang")
-        .agg(count(lit(1)).as("n_toks"), sum("hit").as("hits"))
-        .withColumn("rate_mille", expr("(hits * 1000) DIV n_toks"))
-        .withColumn("flag", col("rate_mille") > 30L)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("hits").as("total_hits"),
-          sum("n_toks").as("total_toks"),
-          sum(when(col("flag"), 1L).otherwise(0L)).as("n_flagged"))
-        .withColumn("corpus_rate_mille",
-          expr("(total_hits * 1000) DIV total_toks"))
-        .orderBy("lang")
-    }),
-
-    // Differential-privacy budget accountant — the ledger a governed
-    // analytics platform keeps per analyst: k queries each spending an
-    // md5 ε (100..600 micro-ε), BASIC composition Σε against the
-    // 3·10⁶ micro budget, and the ADVANCED composition bound
-    // ε·√(2k·ln(1/δ)) + k·ε·(e^ε−1) ≈ for small ε the first term —
-    // frozen here to its auditable integer form: adv_micro =
-    // ε_max·isqrt(2k·L) with L = ln(1/δ) at δ=10⁻⁵ as the literal
-    // 11513 milli-nat (transcendental-on-literal law) and isqrt = ONE
-    // IEEE sqrt on an exact integer. Savings of advanced over basic in
-    // ppm; over-budget flag per analyst.
-    "agg_dp_budget" -> ((s, d) => {
-      val q = s.range(0, 5).select(col("id").as("analyst"))
-        .select(col("analyst"), explode(expr("sequence(0, 19)")).as("qi"))
-        .withColumn("eps_micro", expr(s"${md5Bits("concat('dp:', CAST(analyst AS STRING), ':', CAST(qi AS STRING))", 8)} % 501 + 100"))
-      q.groupBy("analyst")
-        .agg(count(lit(1)).as("k"),
-          sum("eps_micro").as("basic_micro"),
-          max("eps_micro").as("eps_max_micro"))
-        // 2k·ln(1/δ): ln(10⁵) = 11.5129… frozen to 11513 milli-nats
-        .withColumn("adv_micro", expr(
-          "CAST(FLOOR(sqrt(CAST(2 * k * 11513 AS DOUBLE) / 1000.0) * eps_max_micro) AS BIGINT)"))
-        .withColumn("savings_ppm", expr(
-          "IF(adv_micro < basic_micro, ((basic_micro - adv_micro) * 1000000) DIV basic_micro, 0)"))
-        .withColumn("over_budget", least(col("basic_micro"), col("adv_micro")) > 3000000L)
-        .orderBy("analyst")
-    }),
-
-    // Named function arguments — the SQL ergonomics surface (Spark
-    // 3.5+): `mask(payload, upperChar => …, digitChar => …)` with the
-    // arguments REORDERED relative to the signature must resolve
-    // identically to the positional call; graded over a deterministic
-    // payload so the oracle replays the masking rules directly.
-    "api_sql_named_args" -> ((s, d) => {
-      Tables.orders(s, d).where(col("o_orderkey") % 50 === 0)
-        .select(col("o_orderkey"),
-          concat(lit("Ord-"), col("o_orderkey"), lit("-"), col("o_orderstatus"))
-            .as("payload"))
-        .createOrReplaceTempView("graft_named_args_src")
-      s.sql(
-        """SELECT o_orderkey,
-          |  mask(payload, digitChar => '#', upperChar => 'X', lowerChar => 'x') AS masked
-          |FROM graft_named_args_src ORDER BY o_orderkey""".stripMargin)
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Byte-level profile replay: strlen is BYTES in DuckDB; tokens =
-    // non-empty pieces after splitting on ASCII-whitespace runs.
-    "udf_arrow_batch" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
-        |    x -> x <> '')) AS BIGINT) AS n_tokens,
-        |  CAST(strlen(text) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Merge-on-read replay: live = inserts of txns 1 (even keys) and 2
-    // (odd keys) minus the txn-3 delete set (every 10th key; odd
-    // multiples of 7).
-    "source_hive_acid_read" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        |FROM orders
-        |WHERE NOT (o_orderkey % 10 = 0
-        |       OR (o_orderkey % 2 = 1 AND o_orderkey % 7 = 0))
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // Full lifecycle replay in SQL: same md5 centroid sampling, same
-    // exact-integer dots, same 2-probe/top-3 search, both phases.
-    "llm_ann_index_maintain" -> AnnMaintainOracle.sql,
-
-    // Same distinct-value ECDF walk; the verdict compare is HUGEINT in
-    // DuckDB (its native wide integer) against Spark's DECIMAL(38,0).
-    "agg_ks_test" ->
-      """WITH t AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS cents,
-        |    CAST(o_orderkey % 2 AS INT) AS grp FROM orders),
-        |v AS (SELECT cents,
-        |    SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS d0,
-        |    SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS d1
-        |  FROM t GROUP BY cents),
-        |c AS (SELECT cents,
-        |    SUM(d0) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS c0,
-        |    SUM(d1) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS c1
-        |  FROM v),
-        |n AS (SELECT SUM(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS n0,
-        |    SUM(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS n1 FROM t)
-        |SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-        |  CAST(MAX(ABS(c0 * n1 - c1 * n0)) AS BIGINT) AS d_num,
-        |  CAST(MAX(ABS(c0 * n1 - c1 * n0)) * 1000 // (n0 * n1) AS BIGINT) AS d_milli,
-        |  (CAST(MAX(ABS(c0 * n1 - c1 * n0)) AS HUGEINT)
-        |     * MAX(ABS(c0 * n1 - c1 * n0)) * 1000000
-        |   > CAST(1844164 AS HUGEINT) * (n0 + n1) * n0 * n1) AS reject_95
-        |FROM c, n GROUP BY n0, n1""".stripMargin,
-
-    // Same rollup-plus-cumulative construction; sign-safe magnitude DIV.
-    "agg_cliffs_delta" ->
-      """WITH t AS (SELECT CAST(FLOOR(value * 100) AS BIGINT) AS cents, event_type
-        |  FROM events WHERE event_type IN ('view', 'purchase')),
-        |v AS (SELECT cents,
-        |    SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS na,
-        |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS nb
-        |  FROM t GROUP BY cents),
-        |c AS (SELECT cents, na, nb,
-        |    COALESCE(SUM(nb) OVER (ORDER BY cents
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS b_below,
-        |    COALESCE(SUM(nb) OVER (ORDER BY cents
-        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING), 0) AS b_above
-        |  FROM v),
-        |a AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a, CAST(SUM(nb) AS BIGINT) AS n_b,
-        |    CAST(SUM(na * b_below) AS BIGINT) AS gt,
-        |    CAST(SUM(na * b_above) AS BIGINT) AS lt FROM c),
-        |dm AS (SELECT n_a, n_b, gt, lt,
-        |    CAST(CASE WHEN gt >= lt THEN (gt - lt) * 1000 // (n_a * n_b)
-        |         ELSE -((lt - gt) * 1000 // (n_a * n_b)) END AS BIGINT) AS delta_milli
-        |  FROM a)
-        |SELECT n_a, n_b, gt, lt, delta_milli,
-        |  CASE WHEN ABS(delta_milli) < 147 THEN 'negligible'
-        |       WHEN ABS(delta_milli) < 330 THEN 'small'
-        |       WHEN ABS(delta_milli) < 474 THEN 'medium'
-        |       ELSE 'large' END AS magnitude
-        |FROM dm""".stripMargin,
-
-    // Same excerpt plant (eval slots ≡7 mod 62 carry tokens 5..24 of
-    // the neighbor), same 8-token md5 shingles, same hash equijoin.
-    "llm_decontam_ngram" ->
-      """WITH evd AS (
-        |  SELECT e.doc_id,
-        |    CASE WHEN e.doc_id % 62 = 7 AND p.text IS NOT NULL
-        |              AND len(string_split(p.text, ' ')) >= 24
-        |         THEN array_to_string(string_split(p.text, ' ')[5:24], ' ')
-        |         ELSE e.text END AS text
-        |  FROM documents e LEFT JOIN documents p ON p.doc_id = e.doc_id - 1
-        |  WHERE e.doc_id % 31 = 7),
-        |trd AS (SELECT doc_id, text FROM documents WHERE doc_id % 31 <> 7),
-        |sht AS (SELECT doc_id AS train_id, unnest(list_distinct(list_transform(
-        |         generate_series(1, len(string_split(text, ' ')) - 7),
-        |         i -> md5(array_to_string(string_split(text, ' ')[i:i+7], ' '))))) AS g
-        |       FROM trd WHERE len(string_split(text, ' ')) > 7),
-        |she AS (SELECT doc_id AS eval_id, unnest(list_distinct(list_transform(
-        |         generate_series(1, len(string_split(text, ' ')) - 7),
-        |         i -> md5(array_to_string(string_split(text, ' ')[i:i+7], ' '))))) AS g
-        |       FROM evd WHERE len(string_split(text, ' ')) > 7),
-        |hits AS (SELECT train_id, COUNT(*) AS shared_grams
-        |  FROM sht JOIN she USING (g) GROUP BY train_id),
-        |agg AS (SELECT COUNT(*) AS n_c, COALESCE(SUM(shared_grams), 0) AS sgp FROM hits),
-        |nt AS (SELECT COUNT(*) AS n_train FROM trd),
-        |ne AS (SELECT COUNT(*) AS n_eval FROM evd)
-        |SELECT CAST(n_train AS BIGINT) AS n_train, CAST(n_eval AS BIGINT) AS n_eval,
-        |  CAST(n_c AS BIGINT) AS n_contaminated,
-        |  CAST(sgp AS BIGINT) AS shared_gram_pairs,
-        |  CAST((n_c * 1000000) // n_train AS BIGINT) AS contam_ppm
-        |FROM agg, nt, ne""".stripMargin,
-
-    // Same cross-multiplied midpoint form in HUGEINT.
-    "agg_arc_elasticity" ->
-      """WITH t AS (
-        |  SELECT p_brand,
-        |    CASE WHEN l_shipdate < DATE '1998-06-01' THEN 1 ELSE 2 END AS half,
-        |    CAST(l_quantity AS BIGINT) AS q,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS c
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |a AS (SELECT p_brand, half, CAST(SUM(q) AS BIGINT) AS q,
-        |    CAST(SUM(c) AS BIGINT) AS c FROM t GROUP BY 1, 2),
-        |j AS (SELECT h1.p_brand, h1.q AS q1, h2.q AS q2,
-        |    CAST(h1.c AS HUGEINT) * h2.q + CAST(h2.c AS HUGEINT) * h1.q AS p_sum_num,
-        |    CAST(h2.c AS HUGEINT) * h1.q - CAST(h1.c AS HUGEINT) * h2.q AS p_diff_num
-        |  FROM a h1 JOIN a h2 ON h1.p_brand = h2.p_brand
-        |  WHERE h1.half = 1 AND h2.half = 2)
-        |SELECT p_brand, q1, q2,
-        |  CAST((CASE WHEN (q2 - q1) * p_sum_num >= 0
-        |        THEN ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)
-        |        ELSE -(ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)) END)
-        |    * (CASE WHEN p_diff_num < 0 THEN -1 ELSE 1 END) AS BIGINT) AS elasticity_milli,
-        |  ABS(CAST((CASE WHEN (q2 - q1) * p_sum_num >= 0
-        |        THEN ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)
-        |        ELSE -(ABS((q2 - q1) * p_sum_num) * 1000 // ABS((q1 + q2) * p_diff_num)) END)
-        |    * (CASE WHEN p_diff_num < 0 THEN -1 ELSE 1 END) AS BIGINT)) < 1000 AS inelastic
-        |FROM j WHERE p_diff_num <> 0 ORDER BY p_brand""".stripMargin,
-
-    // Same OHLC synthesis (close = value at the max composite
-    // µs·10⁶+id key), same 14-frame sums and milli DIVs.
-    "win_vortex" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
-        |    epoch_us(ts) AS ts_us, event_id
-        |  FROM events),
-        |daily AS (SELECT event_type, day, MAX(cents) AS high, MIN(cents) AS low,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS close
-        |  FROM e GROUP BY 1, 2),
-        |lagd AS (SELECT event_type, day, high, low, close,
-        |    LAG(low) OVER w AS prev_low, LAG(high) OVER w AS prev_high,
-        |    LAG(close) OVER w AS prev_close
-        |  FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-        |vm AS (SELECT event_type, day,
-        |    ABS(high - prev_low) AS vm_plus, ABS(low - prev_high) AS vm_minus,
-        |    GREATEST(high - low, ABS(high - prev_close), ABS(low - prev_close)) AS tr
-        |  FROM lagd WHERE prev_low IS NOT NULL),
-        |fr AS (SELECT event_type, day,
-        |    ROW_NUMBER() OVER w AS rn,
-        |    SUM(vm_plus) OVER f AS svp, SUM(vm_minus) OVER f AS svm,
-        |    SUM(tr) OVER f AS str
-        |  FROM vm WINDOW
-        |    w AS (PARTITION BY event_type ORDER BY day),
-        |    f AS (PARTITION BY event_type ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
-        |SELECT event_type, day,
-        |  CAST((svp * 1000) // str AS BIGINT) AS vi_plus_milli,
-        |  CAST((svm * 1000) // str AS BIGINT) AS vi_minus_milli,
-        |  (svp * 1000) // str > (svm * 1000) // str AS uptrend
-        |FROM fr WHERE rn >= 14 AND str > 0 AND day % 5 = 0
-        |ORDER BY event_type, day""".stripMargin,
-
-    // Same exact-median split, same declared per-term truncation.
-    "agg_mood_median" ->
-      """WITH t AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS cents,
-        |    o_orderpriority AS grp FROM orders),
-        |v AS (SELECT cents, COUNT(*) AS n FROM t GROUP BY cents),
-        |c AS (SELECT cents, SUM(n) OVER (ORDER BY cents ROWS UNBOUNDED PRECEDING) AS cum FROM v),
-        |nn0 AS (SELECT COUNT(*) AS nn FROM t),
-        |med AS (SELECT MIN(cents) AS median_cents FROM c, nn0 WHERE cum >= (nn + 1) // 2),
-        |cnt AS (SELECT grp, COUNT(*) AS n_g,
-        |    SUM(CASE WHEN cents > median_cents THEN 1 ELSE 0 END) AS a_g
-        |  FROM t, med GROUP BY grp),
-        |tot AS (SELECT CAST(SUM(n_g) AS BIGINT) AS nn, CAST(SUM(a_g) AS BIGINT) AS aa FROM cnt),
-        |terms AS (SELECT
-        |    (CAST(a_g AS HUGEINT) * nn - CAST(n_g AS HUGEINT) * aa)
-        |      * (CAST(a_g AS HUGEINT) * nn - CAST(n_g AS HUGEINT) * aa) // n_g AS term,
-        |    nn, aa
-        |  FROM cnt, tot)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS k_groups, nn AS n_total, aa AS n_above,
-        |  CAST(SUM(term) AS BIGINT) AS stat_num,
-        |  CAST(SUM(term) AS HUGEINT) * 1000 > CAST(9488 AS HUGEINT) * aa * (nn - aa) AS reject_95
-        |FROM terms GROUP BY nn, aa""".stripMargin,
-
-    // Same bounded-day pair sweep, tie-corrected variance, squared
-    // z-compare, and lower-median Sen slope with the declared per-pair
-    // micro truncation.
-    "agg_mann_kendall" ->
-      """WITH e AS (SELECT event_type, CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |daily AS (SELECT event_type, day, CAST(SUM(cents) AS BIGINT) AS v
-        |  FROM e GROUP BY 1, 2),
-        |pairs AS (SELECT x.event_type, y.day - x.day AS dd, y.v - x.v AS dv
-        |  FROM daily x JOIN daily y
-        |    ON x.event_type = y.event_type AND x.day < y.day),
-        |sv AS (SELECT event_type, CAST(SUM(SIGN(dv)) AS BIGINT) AS s_stat
-        |  FROM pairs GROUP BY 1),
-        |nd AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM daily GROUP BY 1),
-        |ties AS (SELECT event_type,
-        |    CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_num
-        |  FROM (SELECT event_type, v, COUNT(*) AS t FROM daily GROUP BY 1, 2)
-        |  GROUP BY 1),
-        |sl AS (SELECT event_type,
-        |    CASE WHEN dv >= 0 THEN (dv * 1000000) // dd
-        |         ELSE -((-dv * 1000000) // dd) END AS slope_micro, dd, dv
-        |  FROM pairs),
-        |sen AS (SELECT event_type, slope_micro AS sen_slope_micro FROM (
-        |    SELECT event_type, slope_micro,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type
-        |        ORDER BY slope_micro, dd, dv) AS rn,
-        |      COUNT(*) OVER (PARTITION BY event_type) AS np
-        |    FROM sl) WHERE rn = (np + 1) // 2)
-        |SELECT nd.event_type, n AS n_days, s_stat,
-        |  n * (n - 1) * (2 * n + 5) - tie_num AS var_num, sen_slope_micro,
-        |  CASE WHEN s_stat > 0 AND (s_stat - 1) * (s_stat - 1) * 18 * 10000
-        |         > 38416 * (n * (n - 1) * (2 * n + 5) - tie_num) THEN 'increasing'
-        |       WHEN s_stat < 0 AND (s_stat + 1) * (s_stat + 1) * 18 * 10000
-        |         > 38416 * (n * (n - 1) * (2 * n + 5) - tie_num) THEN 'decreasing'
-        |       ELSE 'none' END AS trend
-        |FROM nd JOIN sv USING (event_type) JOIN ties USING (event_type)
-        |  JOIN sen USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    // Same 1-in-100 sample and pairwise counts, both direction DIVs.
-    "agg_somers_d" ->
-      """WITH t AS (SELECT o_orderkey AS k,
-        |    CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS x,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS y
-        |  FROM orders WHERE o_orderkey % 100 = 7),
-        |p AS (SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-        |    CAST(SUM(CASE WHEN (a.x - b.x) * (a.y - b.y) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-        |    CAST(SUM(CASE WHEN (a.x - b.x) * (a.y - b.y) < 0 THEN 1 ELSE 0 END) AS BIGINT) AS nd,
-        |    CAST(SUM(CASE WHEN a.x = b.x THEN 1 ELSE 0 END) AS BIGINT) AS tx,
-        |    CAST(SUM(CASE WHEN a.y = b.y THEN 1 ELSE 0 END) AS BIGINT) AS ty
-        |  FROM t a JOIN t b ON a.k < b.k)
-        |SELECT n0, nc, nd, tx, ty,
-        |  CAST(CASE WHEN nc >= nd THEN ((nc - nd) * 1000) // (n0 - tx)
-        |       ELSE -(((nd - nc) * 1000) // (n0 - tx)) END AS BIGINT) AS d_yx_milli,
-        |  CAST(CASE WHEN nc >= nd THEN ((nc - nd) * 1000) // (n0 - ty)
-        |       ELSE -(((nd - nc) * 1000) // (n0 - ty)) END AS BIGINT) AS d_xy_milli
-        |FROM p""".stripMargin,
-
-    // Same planted 80%-agreement raters, same Do/De cross-multiplied α.
-    "agg_krippendorff_alpha" ->
-      s"""WITH codes AS (SELECT doc_id, CAST(i AS BIGINT) AS r,
-        |    CASE WHEN ${duckMd5Bits("'kn:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 8)} % 10 < 8
-        |      THEN ${duckMd5Bits("'kb:' || CAST(doc_id AS VARCHAR) || ':b'", 8)} % 4
-        |      ELSE ${duckMd5Bits("'kc:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 8)} % 4 END AS code
-        |  FROM documents, generate_series(0, 2) t(i) WHERE doc_id % 11 = 0),
-        |m AS (SELECT CAST(SUM(CASE WHEN p.code <> q.code THEN 1 ELSE 0 END) AS BIGINT) AS mismatch,
-        |    CAST(COUNT(*) AS BIGINT) AS pairs
-        |  FROM codes p JOIN codes q ON p.doc_id = q.doc_id AND p.r < q.r),
-        |f AS (SELECT CAST(SUM(nk) AS BIGINT) AS nn, CAST(SUM(nk * nk) AS BIGINT) AS sq
-        |  FROM (SELECT code, COUNT(*) AS nk FROM codes GROUP BY code))
-        |SELECT mismatch, pairs, nn AS n_values, nn * nn - sq AS de_num,
-        |  CAST(1000000 - (mismatch * nn * (nn - 1) * 1000000)
-        |    // (pairs * (nn * nn - sq)) AS BIGINT) AS alpha_ppm
-        |FROM m, f""".stripMargin,
-
-    // Same synthetic lifetimes, same declared per-step micro truncation.
-    "agg_nelson_aalen" ->
-      s"""WITH subj AS (SELECT user_id,
-        |    ${duckMd5Bits("na", "user_id", 8)} % 90 + 1 AS raw_day,
-        |    ${duckMd5Bits("nc", "user_id", 8)} % 7 = 0 AS censored
-        |  FROM (SELECT DISTINCT user_id FROM events)),
-        |s2 AS (SELECT user_id, censored,
-        |    CASE WHEN censored THEN raw_day // 2 + 1 ELSE raw_day END AS day FROM subj),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM s2),
-        |bd AS (SELECT day,
-        |    CAST(SUM(CASE WHEN NOT censored THEN 1 ELSE 0 END) AS BIGINT) AS d,
-        |    CAST(COUNT(*) AS BIGINT) AS leaving
-        |  FROM s2 GROUP BY day),
-        |r AS (SELECT day, d, leaving,
-        |    n_total - COALESCE(SUM(leaving) OVER (ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-        |  FROM bd, tot),
-        |st AS (SELECT day, n_risk, d, (d * 1000000) // n_risk AS step_micro
-        |  FROM r WHERE d > 0)
-        |SELECT day, CAST(n_risk AS BIGINT) AS n_risk, d,
-        |  CAST(step_micro AS BIGINT) AS step_micro,
-        |  CAST(SUM(step_micro) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |    AS hazard_micro
-        |FROM st ORDER BY day""".stripMargin,
-
-    // Same cleared quotient, one IEEE sqrt, declared cadence DIVs.
-    "agg_eoq" ->
-      """WITH a AS (SELECT p_brand, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS d_units
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey GROUP BY p_brand),
-        |e AS (SELECT p_brand, d_units,
-        |    CAST(FLOOR(SQRT(CAST((2 * d_units * 5000) // 250 AS DOUBLE))) AS BIGINT) AS eoq_units
-        |  FROM a)
-        |SELECT p_brand, d_units, eoq_units,
-        |  (d_units + eoq_units - 1) // eoq_units AS orders_per_year,
-        |  (eoq_units * 365000) // d_units AS cycle_days_milli
-        |FROM e ORDER BY p_brand""".stripMargin,
-
-    // Same running-max island construction and exact coverage algebra.
-    "agg_interval_merge" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS start_us,
-        |    epoch_us(ts) + 1800000000 AS end_us FROM events),
-        |isl AS (SELECT user_id, start_us, end_us,
-        |    CASE WHEN MAX(end_us) OVER (PARTITION BY user_id ORDER BY start_us, end_us
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-        |      OR start_us > MAX(end_us) OVER (PARTITION BY user_id ORDER BY start_us, end_us
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |      THEN 1 ELSE 0 END AS new_island
-        |  FROM iv),
-        |num AS (SELECT user_id, start_us, end_us,
-        |    SUM(new_island) OVER (PARTITION BY user_id ORDER BY start_us, end_us
-        |      ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM isl),
-        |g AS (SELECT user_id, island, COUNT(*) AS n_iv,
-        |    MIN(start_us) AS s, MAX(end_us) AS e
-        |  FROM num GROUP BY 1, 2)
-        |SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-        |  CAST(SUM(n_iv) AS BIGINT) AS n_intervals,
-        |  CAST(COUNT(*) AS BIGINT) AS n_islands,
-        |  CAST(SUM(e - s) AS BIGINT) AS covered_us
-        |FROM g""".stripMargin,
-
-    // Same 12-token windows, ≥2-distinct-doc flag, island merge in
-    // token space, per-language ppm.
-    "llm_dedup_substring" ->
-      """WITH dd AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-        |w AS (SELECT doc_id, lang, CAST(i - 1 AS BIGINT) AS i,
-        |    substring(md5(array_to_string(t[i:i+11], ' ')), 1, 16) AS h
-        |  FROM dd, LATERAL (SELECT unnest(generate_series(1, len(t) - 11)) AS i)
-        |  WHERE len(t) >= 12),
-        |rep AS (SELECT h FROM w GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2),
-        |fl AS (SELECT doc_id, lang, i, i + 11 AS e FROM w JOIN rep USING (h)),
-        |mk AS (SELECT doc_id, lang, i, e,
-        |    MAX(e) OVER (PARTITION BY doc_id ORDER BY i, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_e
-        |  FROM fl),
-        |br AS (SELECT doc_id, lang, i, e,
-        |    CASE WHEN max_e IS NULL OR i > max_e + 1 THEN 1 ELSE 0 END AS brk
-        |  FROM mk),
-        |isl AS (SELECT doc_id, lang, i, e,
-        |    SUM(brk) OVER (PARTITION BY doc_id ORDER BY i, e ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM br),
-        |sp AS (SELECT doc_id, lang, island, MIN(i) AS s0, MAX(e) AS e0
-        |  FROM isl GROUP BY 1, 2, 3),
-        |tm AS (SELECT lang, CAST(SUM(len(t)) AS BIGINT) AS total_tokens FROM dd GROUP BY lang)
-        |SELECT sp.lang, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs_affected,
-        |  CAST(COUNT(*) AS BIGINT) AS n_spans,
-        |  CAST(SUM(e0 - s0 + 1) AS BIGINT) AS repeated_tokens,
-        |  total_tokens,
-        |  CAST((SUM(e0 - s0 + 1) * 1000000) // total_tokens AS BIGINT) AS repeat_ppm
-        |FROM sp JOIN tm ON sp.lang = tm.lang
-        |GROUP BY sp.lang, total_tokens ORDER BY sp.lang""".stripMargin,
-
-    // Same unrolled per-step truncation, same ppm share.
-    "llm_domain_mix_mw" ->
-      s"""WITH d0 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang),
-        |st AS (SELECT lang, n_docs,
-        |  ((((((((((1000000
-        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '0'", 8)} % 400)) // 1000)
-        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '1'", 8)} % 400)) // 1000)
-        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '2'", 8)} % 400)) // 1000)
-        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '3'", 8)} % 400)) // 1000)
-        |    * (1000 + ${duckMd5Bits("'mw:' || lang || ':' || '4'", 8)} % 400)) // 1000)
-        |    AS w
-        |  FROM d0),
-        |tt AS (SELECT CAST(SUM(w) AS BIGINT) AS w_total FROM st)
-        |SELECT lang, n_docs, CAST(w AS BIGINT) AS w,
-        |  CAST((w * 1000000) // w_total AS BIGINT) AS share_ppm
-        |FROM st, tt ORDER BY lang""".stripMargin,
-
-    // Same floor quotas and remainder ranking; Σseats = 100 exactly.
-    "agg_apportionment" ->
-      """WITH rev AS (SELECT CAST(n_regionkey AS BIGINT) AS region,
-        |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT)) AS BIGINT) AS cents
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1),
-        |t AS (SELECT CAST(SUM(cents) AS BIGINT) AS total FROM rev),
-        |b AS (SELECT region, cents,
-        |    (cents * 100) // total AS base, (cents * 100) % total AS rem
-        |  FROM rev, t),
-        |bs AS (SELECT CAST(SUM(base) AS BIGINT) AS base_sum FROM b),
-        |r AS (SELECT region, cents, base, rem,
-        |    ROW_NUMBER() OVER (ORDER BY rem DESC, region) AS rk FROM b)
-        |SELECT region, cents, CAST(base AS BIGINT) AS base,
-        |  CAST(base + (CASE WHEN rk <= 100 - base_sum THEN 1 ELSE 0 END) AS BIGINT) AS seats
-        |FROM r, bs ORDER BY region""".stripMargin,
-
-    // Golden: batches 0 and 1 of the pinned rate source — 50 values per
-    // batch, one second apart, value ranges 0..49 / 50..99.
-    "stream_rate_source" ->
-      """SELECT CAST(second AS BIGINT) AS second, CAST(n AS BIGINT) AS n,
-        |  CAST(value_sum AS BIGINT) AS value_sum
-        |FROM (VALUES (0, 50, 1225), (1, 50, 3725)) AS t(second, n, value_sum)
-        |ORDER BY second""".stripMargin,
-
-    // Same config ladder and integer plan arithmetic.
-    "llm_act_ckpt_plan" ->
-      """WITH cfg AS (SELECT * FROM (VALUES
-        |    ('125m', 12, 768), ('1b', 24, 2048), ('7b', 32, 4096),
-        |    ('30b', 48, 6144), ('70b', 80, 8192)) AS t(model, layers, hidden)),
-        |p AS (SELECT model, CAST(layers AS BIGINT) AS layers,
-        |    CAST(hidden AS BIGINT) AS hidden,
-        |    14 * 4096 * 8 * CAST(hidden AS BIGINT) * 2 AS a,
-        |    CAST(FLOOR(SQRT(CAST(layers AS DOUBLE))) AS BIGINT) AS k
-        |  FROM cfg),
-        |m AS (SELECT model, layers, hidden, k AS k_segments,
-        |    (layers * a) // 1048576 AS mem_no_ckpt_mb,
-        |    (((layers + k - 1) // k + k) * a) // 1048576 AS mem_ckpt_mb
-        |  FROM p)
-        |SELECT model, layers, hidden, k_segments, mem_no_ckpt_mb, mem_ckpt_mb,
-        |  ((mem_no_ckpt_mb - mem_ckpt_mb) * 1000000) // mem_no_ckpt_mb AS mem_save_ppm,
-        |  ((layers - k_segments) * 1000000) // (3 * layers) AS recompute_overhead_ppm
-        |FROM m ORDER BY layers""".stripMargin,
-
-    // Same three-piece base32 arithmetic, same Crockford alphabet.
-    "fn_ulid_roundtrip" -> UlidOracle.sql,
-
-    // Post-state identity with the MOR read: compaction must be
-    // semantically invisible — the oracle IS source_hive_acid_read's.
-    "sink_hive_acid_compact" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-        |FROM orders
-        |WHERE NOT (o_orderkey % 10 = 0
-        |       OR (o_orderkey % 2 = 1 AND o_orderkey % 7 = 0))
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // Same md5 pseudo-lexicon, same per-doc flag band, same rollup.
-    "llm_toxicity_lexicon" ->
-      s"""WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |h AS (SELECT doc_id, lang,
-        |    CASE WHEN ${duckMd5Bits("'lex:' || w", 8)} % 97 = 13
-        |      THEN 1 ELSE 0 END AS hit
-        |  FROM toks),
-        |pd AS (SELECT doc_id, lang, COUNT(*) AS n_toks, SUM(hit) AS hits,
-        |    (SUM(hit) * 1000) // COUNT(*) AS rate_mille
-        |  FROM h GROUP BY 1, 2)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(hits) AS BIGINT) AS total_hits,
-        |  CAST(SUM(n_toks) AS BIGINT) AS total_toks,
-        |  CAST(SUM(CASE WHEN rate_mille > 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
-        |  CAST((SUM(hits) * 1000) // SUM(n_toks) AS BIGINT) AS corpus_rate_mille
-        |FROM pd GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // Same md5 ε draws, same frozen ln(1/δ) literal, same one-sqrt
-    // advanced bound.
-    "agg_dp_budget" ->
-      s"""WITH q AS (SELECT CAST(a.i AS BIGINT) AS analyst, CAST(qi.i AS BIGINT) AS qi
-        |  FROM generate_series(0, 4) a(i), generate_series(0, 19) qi(i)),
-        |e AS (SELECT analyst, qi,
-        |    ${duckMd5Bits("'dp:' || CAST(analyst AS VARCHAR) || ':' || CAST(qi AS VARCHAR)", 8)} % 501 + 100 AS eps_micro
-        |  FROM q),
-        |g AS (SELECT analyst, CAST(COUNT(*) AS BIGINT) AS k,
-        |    CAST(SUM(eps_micro) AS BIGINT) AS basic_micro,
-        |    CAST(MAX(eps_micro) AS BIGINT) AS eps_max_micro
-        |  FROM e GROUP BY analyst),
-        |v AS (SELECT analyst, k, basic_micro, eps_max_micro,
-        |    CAST(FLOOR(SQRT(CAST(2 * k * 11513 AS DOUBLE) / 1000.0) * eps_max_micro) AS BIGINT)
-        |      AS adv_micro
-        |  FROM g)
-        |SELECT analyst, k, basic_micro, eps_max_micro, adv_micro,
-        |  CAST(CASE WHEN adv_micro < basic_micro
-        |    THEN ((basic_micro - adv_micro) * 1000000) // basic_micro ELSE 0 END AS BIGINT)
-        |    AS savings_ppm,
-        |  LEAST(basic_micro, adv_micro) > 3000000 AS over_budget
-        |FROM v ORDER BY analyst""".stripMargin,
-
-    // Masking-rule replay: simultaneous per-class substitution is safe
-    // as a chain because no replacement creates a later class's member.
-    "api_sql_named_args" ->
-      """SELECT o_orderkey,
-        |  regexp_replace(regexp_replace(regexp_replace(
-        |    'Ord-' || CAST(o_orderkey AS VARCHAR) || '-' || o_orderstatus,
-        |    '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', '#', 'g') AS masked
-        |FROM orders WHERE o_orderkey % 50 = 0 ORDER BY o_orderkey""".stripMargin,
-
-    // Same grid levels, direction split, zero-days-break-runs reversal
-    // rule.
-    "win_renko" ->
+    },
+      // Same grid levels, direction split, zero-days-break-runs reversal
+      // rule.
       """WITH e AS (SELECT event_type,
         |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
@@ -1638,12 +1392,185 @@ object Round12Ops extends Family {
         |  CAST(SUM(CASE WHEN dl < 0 THEN -dl ELSE 0 END) AS BIGINT) AS bricks_down,
         |  CAST(SUM(CASE WHEN dir <> 0 AND prev_dir IS NOT NULL AND prev_dir <> 0
         |       AND dir <> prev_dir THEN 1 ELSE 0 END) AS BIGINT) AS n_reversals
-        |FROM dd GROUP BY event_type ORDER BY event_type""".stripMargin
+        |FROM dd GROUP BY event_type ORDER BY event_type""".stripMargin),
+
+    // Hive ACID MAJOR COMPACTION — the maintenance half of
+    // source_hive_acid_read's lifecycle: fold base + insert deltas +
+    // delete deltas into ONE new base (base_0000003, flattened row ids
+    // re-stamped under the compacting transaction) and prove the
+    // compacted table serves EXACTLY the merged state the MOR read
+    // produced — same oracle, different physical layout. The graded
+    // read touches only the new base (delta dirs ignored by the
+    // compaction watermark); at 100 TB this is the nightly job that
+    // keeps MOR read amplification bounded.
+    Op("sink_hive_acid_compact", (s, d) => {
+      // its own copy of the MOR layout: the new base must never land in
+      // the read op's directory
+      val root = Scratch.staged("hive_acid_major", d)(HiveAcid.stage(s, d))
+      val rootP = java.nio.file.Paths.get(root)
+      withConfs(s)("spark.sql.orc.impl" -> "hive") {
+        val dirs = java.nio.file.Files.list(rootP).iterator().asScala
+          .map(_.getFileName.toString).toSeq.sorted
+        val live = dirs.filter(n => n.startsWith("base_") || n.startsWith("delta_"))
+          .filterNot(_ == "base_0000003")
+        val dels = dirs.filter(_.startsWith("delete_delta_"))
+        val rows = live.map(n => s.read.orc(s"$root/$n")).reduce(_ unionByName _)
+        val deleted = dels.map(n => s.read.orc(s"$root/$n")).reduce(_ unionByName _)
+          .select("originalTransaction", "bucket", "rowId")
+        // Row identity must stay UNIQUE under the compacting txn: rows
+        // from base_0000001 and delta_0000002 can share (bucket, rowId),
+        // so re-stamping originalTransaction=3 while keeping the old
+        // rowId would collide the ACID identity and corrupt any future
+        // delete-delta against the new base. Re-number rowId per bucket
+        // over the deterministic (originalTransaction, rowId) order.
+        val wC = Window.partitionBy("bucket")
+          .orderBy("originalTransaction", "rowId")
+        rows.join(deleted, Seq("originalTransaction", "bucket", "rowId"), "left_anti")
+          .select(lit(0).as("operation"),
+            lit(3L).as("originalTransaction"),
+            col("bucket"),
+            (row_number().over(wC) - 1).cast("bigint").as("rowId"),
+            lit(3L).as("currentTransaction"), col("row"))
+          .write.mode("overwrite").orc(s"$root/base_0000003")
+        // the graded read: new base only, no merge work left
+        s.read.orc(s"$root/base_0000003")
+          .select(col("row.o_orderstatus").as("o_orderstatus"),
+            col("row.o_totalprice").as("o_totalprice"))
+          .groupBy("o_orderstatus")
+          .agg(count(lit(1)).as("n_orders"),
+            sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
+          .orderBy("o_orderstatus")
+          .localCheckpoint()
+      }
+    },
+      // Post-state identity with the MOR read: compaction must be
+      // semantically invisible — the oracle IS source_hive_acid_read's.
+      """SELECT o_orderstatus, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+        |FROM orders
+        |WHERE NOT (o_orderkey % 10 = 0
+        |       OR (o_orderkey % 2 = 1 AND o_orderkey % 7 = 0))
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+
+    // Lexicon screening — the blocklist-join content filter every
+    // curation pipeline runs (toxicity/PII-keyword/spam lexicons are
+    // all this op with different term lists; the lexicon here is the
+    // md5-derived pseudo-list `token % 97 == 13`, which keeps the
+    // fixture clean while exercising the real shape): corpus tokens
+    // exploded once, the bounded lexicon BROADCAST to the scan, hits
+    // per mille of each doc's token mass, flag at >30‰. Per-language
+    // rollup; the explode-join is the only data-scaled work.
+    Op("llm_toxicity_lexicon", (s, d) => {
+      val toks = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
+      val flagged = toks.withColumn("hit", expr(
+        s"IF(${md5Bits("concat('lex:', w)", 8)} % 97 = 13, 1, 0)"))
+      flagged.groupBy("doc_id", "lang")
+        .agg(count(lit(1)).as("n_toks"), sum("hit").as("hits"))
+        .withColumn("rate_mille", expr("(hits * 1000) DIV n_toks"))
+        .withColumn("flag", col("rate_mille") > 30L)
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_docs"),
+          sum("hits").as("total_hits"),
+          sum("n_toks").as("total_toks"),
+          sum(when(col("flag"), 1L).otherwise(0L)).as("n_flagged"))
+        .withColumn("corpus_rate_mille",
+          expr("(total_hits * 1000) DIV total_toks"))
+        .orderBy("lang")
+    },
+      // Same md5 pseudo-lexicon, same per-doc flag band, same rollup.
+      s"""WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
+        |  FROM documents),
+        |h AS (SELECT doc_id, lang,
+        |    CASE WHEN ${duckMd5Bits("'lex:' || w", 8)} % 97 = 13
+        |      THEN 1 ELSE 0 END AS hit
+        |  FROM toks),
+        |pd AS (SELECT doc_id, lang, COUNT(*) AS n_toks, SUM(hit) AS hits,
+        |    (SUM(hit) * 1000) // COUNT(*) AS rate_mille
+        |  FROM h GROUP BY 1, 2)
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(hits) AS BIGINT) AS total_hits,
+        |  CAST(SUM(n_toks) AS BIGINT) AS total_toks,
+        |  CAST(SUM(CASE WHEN rate_mille > 30 THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
+        |  CAST((SUM(hits) * 1000) // SUM(n_toks) AS BIGINT) AS corpus_rate_mille
+        |FROM pd GROUP BY lang ORDER BY lang""".stripMargin),
+
+    // Differential-privacy budget accountant — the ledger a governed
+    // analytics platform keeps per analyst: k queries each spending an
+    // md5 ε (100..600 micro-ε), BASIC composition Σε against the
+    // 3·10⁶ micro budget, and the ADVANCED composition bound
+    // ε·√(2k·ln(1/δ)) + k·ε·(e^ε−1) ≈ for small ε the first term —
+    // frozen here to its auditable integer form: adv_micro =
+    // ε_max·isqrt(2k·L) with L = ln(1/δ) at δ=10⁻⁵ as the literal
+    // 11513 milli-nat (transcendental-on-literal law) and isqrt = ONE
+    // IEEE sqrt on an exact integer. Savings of advanced over basic in
+    // ppm; over-budget flag per analyst.
+    Op("agg_dp_budget", (s, d) => {
+      val q = s.range(0, 5).select(col("id").as("analyst"))
+        .select(col("analyst"), explode(expr("sequence(0, 19)")).as("qi"))
+        .withColumn("eps_micro", expr(s"${md5Bits("concat('dp:', CAST(analyst AS STRING), ':', CAST(qi AS STRING))", 8)} % 501 + 100"))
+      q.groupBy("analyst")
+        .agg(count(lit(1)).as("k"),
+          sum("eps_micro").as("basic_micro"),
+          max("eps_micro").as("eps_max_micro"))
+        // 2k·ln(1/δ): ln(10⁵) = 11.5129… frozen to 11513 milli-nats
+        .withColumn("adv_micro", expr(
+          "CAST(FLOOR(sqrt(CAST(2 * k * 11513 AS DOUBLE) / 1000.0) * eps_max_micro) AS BIGINT)"))
+        .withColumn("savings_ppm", expr(
+          "IF(adv_micro < basic_micro, ((basic_micro - adv_micro) * 1000000) DIV basic_micro, 0)"))
+        .withColumn("over_budget", least(col("basic_micro"), col("adv_micro")) > 3000000L)
+        .orderBy("analyst")
+    },
+      // Same md5 ε draws, same frozen ln(1/δ) literal, same one-sqrt
+      // advanced bound.
+      s"""WITH q AS (SELECT CAST(a.i AS BIGINT) AS analyst, CAST(qi.i AS BIGINT) AS qi
+        |  FROM generate_series(0, 4) a(i), generate_series(0, 19) qi(i)),
+        |e AS (SELECT analyst, qi,
+        |    ${duckMd5Bits("'dp:' || CAST(analyst AS VARCHAR) || ':' || CAST(qi AS VARCHAR)", 8)} % 501 + 100 AS eps_micro
+        |  FROM q),
+        |g AS (SELECT analyst, CAST(COUNT(*) AS BIGINT) AS k,
+        |    CAST(SUM(eps_micro) AS BIGINT) AS basic_micro,
+        |    CAST(MAX(eps_micro) AS BIGINT) AS eps_max_micro
+        |  FROM e GROUP BY analyst),
+        |v AS (SELECT analyst, k, basic_micro, eps_max_micro,
+        |    CAST(FLOOR(SQRT(CAST(2 * k * 11513 AS DOUBLE) / 1000.0) * eps_max_micro) AS BIGINT)
+        |      AS adv_micro
+        |  FROM g)
+        |SELECT analyst, k, basic_micro, eps_max_micro, adv_micro,
+        |  CAST(CASE WHEN adv_micro < basic_micro
+        |    THEN ((basic_micro - adv_micro) * 1000000) // basic_micro ELSE 0 END AS BIGINT)
+        |    AS savings_ppm,
+        |  LEAST(basic_micro, adv_micro) > 3000000 AS over_budget
+        |FROM v ORDER BY analyst""".stripMargin),
+
+    // Named function arguments — the SQL ergonomics surface (Spark
+    // 3.5+): `mask(payload, upperChar => …, digitChar => …)` with the
+    // arguments REORDERED relative to the signature must resolve
+    // identically to the positional call; graded over a deterministic
+    // payload so the oracle replays the masking rules directly.
+    Op("api_sql_named_args", (s, d) => {
+      Tables.orders(s, d).where(col("o_orderkey") % 50 === 0)
+        .select(col("o_orderkey"),
+          concat(lit("Ord-"), col("o_orderkey"), lit("-"), col("o_orderstatus"))
+            .as("payload"))
+        .createOrReplaceTempView("graft_named_args_src")
+      s.sql(
+        """SELECT o_orderkey,
+          |  mask(payload, digitChar => '#', upperChar => 'X', lowerChar => 'x') AS masked
+          |FROM graft_named_args_src ORDER BY o_orderkey""".stripMargin)
+    },
+      // Masking-rule replay: simultaneous per-class substitution is safe
+      // as a chain because no replacement creates a later class's member.
+      """SELECT o_orderkey,
+        |  regexp_replace(regexp_replace(regexp_replace(
+        |    'Ord-' || CAST(o_orderkey AS VARCHAR) || '-' || o_orderstatus,
+        |    '[A-Z]', 'X', 'g'), '[a-z]', 'x', 'g'), '[0-9]', '#', 'g') AS masked
+        |FROM orders WHERE o_orderkey % 50 = 0 ORDER BY o_orderkey""".stripMargin)
   )
 }
 
 /** Staging for the Hive-ACID layouts (`source_hive_acid_*`,
-  * `sink_hive_acid_minor_compact`): `orders` keys the source rows by `k`,
+  * `sink_hive_acid_*`): `orders` keys the source rows by `k`,
   * and `acidify` puts them in the ACID insert schema, where the synthetic
   * row identity is (originalTransaction, bucket, rowId) and the payload
   * rides in the `row` struct. */
@@ -1660,4 +1587,27 @@ private[ops] object HiveAcid {
     lit(txn).as("currentTransaction"),
     struct(col("k").as("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice")).as("row"))
+
+  /** `source_hive_acid_read`'s layout, written into `root`: the even keys
+    * in base_0000001, the odd keys in an insert delta, and a delete delta
+    * for both. */
+  def stage(s: SparkSession, d: String)(root: String): Unit = {
+    val o = orders(s, d)
+    acidify(o.where(col("k") % 2 === 0), 1L)
+      .write.mode("overwrite").orc(s"$root/base_0000001")
+    acidify(o.where(col("k") % 2 === 1), 2L)
+      .write.mode("overwrite").orc(s"$root/delta_0000002_0000002")
+    // delete delta: a third transaction removes every 10th base row
+    // and every odd multiple of 7 from the insert delta. A delete
+    // delta carries only row IDENTITY — no payload (the ACID layout
+    // nulls `row`; omitting the column entirely keeps the ORC
+    // vectorized reader happy and the bytes smaller).
+    o.where(col("k") % 10 === 0 || (col("k") % 2 === 1 && col("k") % 7 === 0))
+      .select(lit(2).as("operation"),
+        when(col("k") % 2 === 0, 1L).otherwise(2L).as("originalTransaction"),
+        (col("k") % 4).cast("int").as("bucket"),
+        col("k").as("rowId"),
+        lit(3L).as("currentTransaction"))
+      .write.mode("overwrite").orc(s"$root/delete_delta_0000003_0000003")
+  }
 }

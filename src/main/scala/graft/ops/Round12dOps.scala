@@ -22,13 +22,19 @@ object Round12dOps extends Family {
         s"bal${k + 1}" -> s"bal$k + i$k - pay")
     }
 
-  val queries: Map[String, Q] = unique(
+  /** Fibonacci numbers F(2)..F(22) descending (75025 down to 1, skipping
+    * the duplicate F(1)) for the Zeckendorf walk. */
+  private val ZeckFibs = Seq(75025L, 46368L, 28657L, 17711L, 10946L,
+    6765L, 4181L, 2584L, 1597L, 987L, 610L, 377L, 233L, 144L, 89L, 55L,
+    34L, 21L, 13L, 8L, 5L, 3L, 2L, 1L)
+
+  val ops: Seq[Op] = Seq(
     // Fixed-payment amortization schedule — 12 unrolled months of
     // integer interest accrual (bal·bp DIV 120000) against a declared
     // payment P/24; final balance, total interest, principal retired
     // all exact cents. The per-row ledger shape: embarrassingly
     // parallel, no shuffle at all.
-    "fn_amortization" -> ((s, d) => {
+    Op("fn_amortization", (s, d) => {
       val base = Tables.customer(s, d)
         .where(col("c_custkey") % 5 === 2)
         .select(col("c_custkey").as("ck"))
@@ -46,13 +52,27 @@ object Round12dOps extends Family {
         .select("ck", "principal", "rate_bp", "pay", "bal12",
           "total_interest", "principal_paid")
         .orderBy("ck")
+    },
+      // Same 12-step ledger through the same generator.
+      {
+      val walked = amortSteps("//").foldLeft(
+        "(SELECT c_custkey AS ck, (c_custkey % 90000 + 10000) * 20 AS principal, " +
+          "c_custkey % 400 + 100 AS rate_bp, " +
+          "(c_custkey % 90000 + 10000) * 20 // 24 AS pay, " +
+          "(c_custkey % 90000 + 10000) * 20 AS bal0 " +
+          "FROM customer WHERE c_custkey % 5 = 2)") {
+        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
+      s"""SELECT ck, principal, rate_bp, pay, bal12,
+         |  ${(0 until 12).map(k => s"i$k").mkString(" + ")} AS total_interest,
+         |  principal - bal12 AS principal_paid
+         |FROM $walked ORDER BY ck""".stripMargin
     }),
 
     // Payback period — monthly order inflows per priority, investment =
     // 3× the first month's inflow; first month whose running total
     // crosses it, with the within-month fraction exact milli. One sort,
     // one running sum, one crossing pick.
-    "agg_payback_period" -> ((s, d) => {
+    Op("agg_payback_period", (s, d) => {
       val ord = Window.partitionBy("pri").orderBy("mon")
       val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val byPri = Window.partitionBy("pri")
@@ -78,12 +98,32 @@ object Round12dOps extends Family {
           "(invest - (cumin - inflow)) * 1000 DIV inflow"))
         .select("pri", "invest", "midx", "frac_milli", "nmon")
         .orderBy("pri")
-    }),
+    },
+      // Same monthly inflows, same 3× investment, same crossing pick.
+      """WITH m AS (SELECT o_orderpriority AS pri,
+        |    CAST(STRFTIME(o_orderdate, '%Y%m') AS BIGINT) AS mon,
+        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |      AS inflow
+        |  FROM orders GROUP BY 1, 2),
+        |c AS (SELECT *, CAST(SUM(inflow) OVER (PARTITION BY pri
+        |      ORDER BY mon ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumin,
+        |    CAST(FIRST_VALUE(inflow) OVER (PARTITION BY pri ORDER BY mon
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |      AS BIGINT) * 3 AS invest,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY pri ORDER BY mon)
+        |      AS BIGINT) AS midx,
+        |    CAST(COUNT(*) OVER (PARTITION BY pri) AS BIGINT) AS nmon
+        |  FROM m),
+        |x AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY pri ORDER BY mon)
+        |    AS pick FROM c WHERE cumin >= invest)
+        |SELECT pri, invest, midx,
+        |  (invest - (cumin - inflow)) * 1000 // inflow AS frac_milli, nmon
+        |FROM x WHERE pick = 1 ORDER BY pri""".stripMargin),
 
     // Kelly criterion — f* = (b·p − q)/b with p in ppm and b in milli,
     // sign-split ppm output plus the clamped stake and the raw edge.
     // Pure per-row rational algebra.
-    "fn_kelly_criterion" -> ((s, d) => {
+    Op("fn_kelly_criterion", (s, d) => {
       Tables.customer(s, d)
         .where(col("c_custkey") % 7 === 3)
         .select(col("c_custkey").as("ck"))
@@ -98,12 +138,25 @@ object Round12dOps extends Family {
         .select("ck", "p_ppm", "b_milli", "edge_num", "kelly_ppm",
           "stake_ppm")
         .orderBy("ck")
-    }),
+    },
+      // Same rational algebra, same sign split.
+      """WITH b AS (SELECT c_custkey AS ck,
+        |    c_custkey * 7919 % 500000 + 250000 AS p_ppm,
+        |    c_custkey * 104729 % 3000 + 500 AS b_milli
+        |  FROM customer WHERE c_custkey % 7 = 3),
+        |e AS (SELECT *, 1000000 - p_ppm AS q_ppm,
+        |    b_milli * p_ppm - 1000 * (1000000 - p_ppm) AS edge_num FROM b)
+        |SELECT ck, p_ppm, b_milli, edge_num,
+        |  CASE WHEN edge_num < 0 THEN -((-edge_num) // b_milli)
+        |    ELSE edge_num // b_milli END AS kelly_ppm,
+        |  GREATEST(CASE WHEN edge_num < 0 THEN -((-edge_num) // b_milli)
+        |    ELSE edge_num // b_milli END, 0) AS stake_ppm
+        |FROM e ORDER BY ck""".stripMargin),
 
     // Odds conversions — decimal milli → fractional milli, American
     // (milli, sign-split by the ≥2.0 branch), implied probability ppm,
     // and the two-outcome overround. Per-row rational algebra only.
-    "fn_odds_convert" -> ((s, d) => {
+    Op("fn_odds_convert", (s, d) => {
       Tables.part(s, d)
         .where(col("p_partkey") % 13 === 1)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -120,12 +173,24 @@ object Round12dOps extends Family {
         .select("pk", "dec1", "dec2", "frac_milli", "american_milli",
           "implied1_ppm", "overround_ppm")
         .orderBy("pk")
-    }),
+    },
+      // Same branches, same ppm identities.
+      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+        |    CAST(p_partkey AS BIGINT) * 37 % 9000 + 1100 AS dec1,
+        |    CAST(p_partkey AS BIGINT) * 53 % 9000 + 1100 AS dec2
+        |  FROM part WHERE p_partkey % 13 = 1)
+        |SELECT pk, dec1, dec2, dec1 - 1000 AS frac_milli,
+        |  CASE WHEN dec1 >= 2000 THEN (dec1 - 1000) * 100
+        |    ELSE -(100000000 // (dec1 - 1000)) END AS american_milli,
+        |  1000000000 // dec1 AS implied1_ppm,
+        |  1000000000 // dec1 + 1000000000 // dec2 - 1000000
+        |    AS overround_ppm
+        |FROM b ORDER BY pk""".stripMargin),
 
     // Quadratic Bézier sampling — B(t)·100 at t = k/10 kept exact by the
     // integer form (10−k)²P₀ + 2(10−k)kP₁ + k²P₂; endpoints and the
     // control-hull bound graded. Constant 11-point explode per curve.
-    "fn_bezier_points" -> ((s, d) => {
+    Op("fn_bezier_points", (s, d) => {
       Tables.part(s, d)
         .where(col("p_partkey") % 31 === 6)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -139,12 +204,25 @@ object Round12dOps extends Family {
           "(10 - k) * (10 - k) * y0 + 2 * (10 - k) * k * y1 + k * k * y2"))
         .select("pk", "y0", "y1", "y2", "k", "bx100", "by100")
         .orderBy("pk", "k")
-    }),
+    },
+      // Same integer Bernstein form, same constant 11-point series.
+      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+        |    CAST(p_partkey AS BIGINT) * 11 % 200 AS y0,
+        |    CAST(p_partkey AS BIGINT) * 23 % 200 AS y1,
+        |    CAST(p_partkey AS BIGINT) * 41 % 200 AS y2
+        |  FROM part WHERE p_partkey % 31 = 6),
+        |s AS (SELECT CAST(g AS BIGINT) AS k
+        |  FROM generate_series(0, 10) AS gs(g))
+        |SELECT pk, y0, y1, y2, k,
+        |  2 * (10 - k) * k * 50 + k * k * 100 AS bx100,
+        |  (10 - k) * (10 - k) * y0 + 2 * (10 - k) * k * y1 + k * k * y2
+        |    AS by100
+        |FROM b CROSS JOIN s ORDER BY pk, k""".stripMargin),
 
     // TEMA — 3·E1 − 3·E2 + E3 over the three chained finite-lag integer
     // EWMAs (the win_trix stages, different combination): lag-killing
     // triple smoothing; 21 lag probes on ONE sort.
-    "win_tema" -> ((s, d) => {
+    Op("win_tema", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
       def fold(src: String, dst: String)(df: DataFrame): DataFrame = {
@@ -167,13 +245,42 @@ object Round12dOps extends Family {
         .withColumn("tema", expr("3 * e1 - 3 * e2 + e3"))
         .select("event_type", "day", "c", "e1", "e2", "e3", "tema")
         .orderBy("event_type", "day")
+    },
+      // Same three chained stages, same 3·E1−3·E2+E3 blend.
+      {
+      val w = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
+      def stage(src: String, dst: String) = {
+        val num = w.zipWithIndex.map { case (wt, i) =>
+          if (i == 0) s"$wt * $src"
+          else s"COALESCE($wt * lag($src, $i) OVER o, 0)" }.mkString(" + ")
+        val den = w.zipWithIndex.map { case (wt, i) =>
+          if (i == 0) s"$wt"
+          else s"CASE WHEN lag($src, $i) OVER o IS NULL THEN 0 ELSE $wt END" }
+          .mkString(" + ")
+        s"SELECT *, ($num) // ($den) AS $dst"
+      }
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+         |    epoch_us(ts) // 86400000000 AS day,
+         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+         |bar AS (SELECT event_type, day,
+         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+         |  FROM e GROUP BY 1, 2),
+         |s1 AS (${stage("c", "e1")} FROM bar
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |s2 AS (${stage("e1", "e2")} FROM s1
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |s3 AS (${stage("e2", "e3")} FROM s2
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day))
+         |SELECT event_type, day, c, e1, e2, e3,
+         |  3 * e1 - 3 * e2 + e3 AS tema
+         |FROM s3 ORDER BY event_type, day""".stripMargin
     }),
 
     // Empirical Chebyshev coverage — the fraction of closes within k·σ
     // for k = 2, 3 with σ·n from the native IntSqrt (|n·x−S| ≤ k·isqrt
     // (n·Σx²−S²), all integers); Chebyshev's 1−1/k² floor is graded in
     // the spec. One aggregate + one broadcast-back join.
-    "agg_chebyshev_coverage" -> ((s, d) => {
+    Op("agg_chebyshev_coverage", (s, d) => {
       val bars = Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
           expr("ts_us DIV 86400000000").as("day"),
@@ -197,14 +304,40 @@ object Round12dOps extends Family {
         .select("event_type", "n", "sd_n", "within2", "within3",
           "cov2_ppm", "cov3_ppm")
         .orderBy("event_type")
-    }),
+    },
+      // Same n-scaled deviations, same corrected-root fences.
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+         |    epoch_us(ts) // 86400000000 AS day,
+         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+         |bar AS (SELECT event_type, day,
+         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+         |  FROM e GROUP BY 1, 2),
+         |st AS (SELECT event_type AS et, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(SUM(c) AS BIGINT) AS sm,
+         |    CAST(SUM(c * c) AS BIGINT) AS ssq
+         |  FROM bar GROUP BY event_type),
+         |sq AS (SELECT *, ${Round12cOps.duckIsqrt("n * ssq - sm * sm")}
+         |    AS sd_n FROM st),
+         |j AS (SELECT bar.event_type, sq.n, sq.sd_n,
+         |    ABS(sq.n * bar.c - sq.sm) AS absdev_n
+         |  FROM bar JOIN sq ON bar.event_type = sq.et)
+         |SELECT event_type, MAX(n) AS n, MAX(sd_n) AS sd_n,
+         |  CAST(SUM(CASE WHEN absdev_n <= 2 * sd_n THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS within2,
+         |  CAST(SUM(CASE WHEN absdev_n <= 3 * sd_n THEN 1 ELSE 0 END)
+         |    AS BIGINT) AS within3,
+         |  CAST(SUM(CASE WHEN absdev_n <= 2 * sd_n THEN 1 ELSE 0 END)
+         |    AS BIGINT) * 1000000 // MAX(n) AS cov2_ppm,
+         |  CAST(SUM(CASE WHEN absdev_n <= 3 * sd_n THEN 1 ELSE 0 END)
+         |    AS BIGINT) * 1000000 // MAX(n) AS cov3_ppm
+         |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // Continued-fraction convergents — six unrolled Euclid steps with
     // zero-remainder carry-forward, convergent recurrence hᵢ = aᵢhᵢ₋₁ +
     // hᵢ₋₂, best rational approximation with denominator ≤ 50 picked by
     // a descending CASE (k is non-decreasing); approximation error
     // graded as the exact cross-product |p·k − h·q|.
-    "fn_continued_fraction" -> ((s, d) => {
+    Op("fn_continued_fraction", (s, d) => {
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 37 === 12)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -223,13 +356,33 @@ object Round12dOps extends Family {
         .withColumn("err_num", expr("abs(p * best_k - best_h * q)"))
         .select("pk", "p", "q", "best_h", "best_k", "err_num")
         .orderBy("pk")
+    },
+      // Same Euclid walk through the same generator, same descending pick.
+      {
+      val walked = cfSteps("//").foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) * 7919 % 100000 + 1 AS p, " +
+          "CAST(p_partkey AS BIGINT) * 104729 % 100000 + 1 AS q, " +
+          "CAST(p_partkey AS BIGINT) * 7919 % 100000 + 1 AS n0, " +
+          "CAST(p_partkey AS BIGINT) * 104729 % 100000 + 1 AS d0 " +
+          "FROM part WHERE p_partkey % 37 = 12)") {
+        case (prev, (n, e)) =>
+          s"(SELECT *, ${e.replace("0L", "CAST(0 AS BIGINT)")
+            .replace("1L", "CAST(1 AS BIGINT)")} AS $n FROM $prev)" }
+      val pickH = (6 to 1 by -1).map(i =>
+        s"WHEN k$i <= 50 THEN h$i").mkString("CASE ", " ", " ELSE 0 END")
+      val pickK = (6 to 1 by -1).map(i =>
+        s"WHEN k$i <= 50 THEN k$i").mkString("CASE ", " ", " ELSE 1 END")
+      s"""SELECT pk, p, q, $pickH AS best_h, $pickK AS best_k,
+         |  ABS(p * ($pickK) - ($pickH) * q) AS err_num
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Bag symmetric difference — (A ∖ B) ⊎ (B ∖ A) with multiplicities
     // (exceptAll/unionByName, the third bag-algebra shape next to
     // set_except_all): part keys bought by BUILDING vs MACHINERY
     // customers, graded as per-key surplus counts.
-    "set_symmetric_diff" -> ((s, d) => {
+    Op("set_symmetric_diff", (s, d) => {
       def side(seg: String) = Tables.orders(s, d)
         .where(col("o_orderkey") % 11 === 0)
         .join(Tables.customer(s, d).where(col("c_mktsegment") === seg),
@@ -241,13 +394,27 @@ object Round12dOps extends Family {
       a.exceptAll(b).unionByName(b.exceptAll(a))
         .groupBy("pk").agg(count(lit(1)).as("surplus"))
         .orderBy("pk")
-    }),
+    },
+      // Same two bag differences, same rollup.
+      """WITH a AS (SELECT l.l_partkey AS pk
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        |    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        |  WHERE o.o_orderkey % 11 = 0 AND c.c_mktsegment = 'BUILDING'),
+        |b AS (SELECT l.l_partkey AS pk
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        |    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        |  WHERE o.o_orderkey % 11 = 0 AND c.c_mktsegment = 'MACHINERY'),
+        |sd AS ((SELECT pk FROM a EXCEPT ALL SELECT pk FROM b)
+        |  UNION ALL
+        |  (SELECT pk FROM b EXCEPT ALL SELECT pk FROM a))
+        |SELECT pk, CAST(COUNT(*) AS BIGINT) AS surplus
+        |FROM sd GROUP BY pk ORDER BY pk""".stripMargin),
 
     // Typed mapGroups — ONE typed row per key from an unordered group
     // iterator: a single deterministic fold computes the balance range
     // and the argmax customer (lexicographic tie-break), the typed twin
     // of min_by/max_by. Plans one key exchange like any groupBy.
-    "ds_typed_mapgroups" -> ((s, d) => {
+    Op("ds_typed_mapgroups", (s, d) => {
       val classic = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       import classic.implicits._
       val cust = Tables.customer(s, d)
@@ -265,12 +432,21 @@ object Round12dOps extends Family {
         (seg, n, lo, hi, argmax)
       }.toDF("seg", "n", "min_cents", "max_cents", "richest_ck")
         .orderBy("seg")
-    }),
+    },
+      // The relational min/max/argmax the typed fold must equal.
+      """WITH c AS (SELECT c_mktsegment AS seg, c_custkey,
+        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
+        |  FROM customer)
+        |SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
+        |  MIN(cents) AS min_cents, MAX(cents) AS max_cents,
+        |  CAST(MAX_BY(c_custkey, CAST(cents AS HUGEINT) * 10000000
+        |    + c_custkey) AS BIGINT) AS richest_ck
+        |FROM c GROUP BY seg ORDER BY seg""".stripMargin),
 
     // DataFrame melt/unpivot API — a wide per-nation aggregate turned
     // long via Dataset.unpivot (ids/values/variable/value), the Spark 4
     // API twin of SQL UNPIVOT; the oracle replays with UNION ALL.
-    "api_melt" -> ((s, d) => {
+    Op("api_melt", (s, d) => {
       val wide = Tables.customer(s, d)
         .groupBy(col("c_nationkey").cast("bigint").as("nk"))
         .agg(count(lit(1)).as("n_customers"),
@@ -281,14 +457,27 @@ object Round12dOps extends Family {
         Array(col("n_customers"), col("sum_cents"), col("max_cents")),
         "metric", "value")
         .orderBy("nk", "metric")
-    }),
+    },
+      // The UNION ALL replay of the unpivot.
+      """WITH w AS (SELECT CAST(c_nationkey AS BIGINT) AS nk,
+        |    CAST(COUNT(*) AS BIGINT) AS n_customers,
+        |    CAST(SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+        |      AS sum_cents,
+        |    MAX(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS max_cents
+        |  FROM customer GROUP BY 1)
+        |SELECT nk, 'n_customers' AS metric, n_customers AS value FROM w
+        |UNION ALL
+        |SELECT nk, 'sum_cents', sum_cents FROM w
+        |UNION ALL
+        |SELECT nk, 'max_cents', max_cents FROM w
+        |ORDER BY nk, metric""".stripMargin),
 
     // Conway doomsday day-of-week — anchor 3 for the 1900s, year
     // doomsday (3 + y₂ + y₂ DIV 4) mod 7, month doomsday dates with the
     // leap branch; the computed dow is graded AGAINST each engine's own
     // dayofweek (normalized to 0=Sunday), proving the two calendars and
     // the algorithm all agree.
-    "fn_doomsday_dow" -> ((s, d) => {
+    Op("fn_doomsday_dow", (s, d) => {
       Tables.orders(s, d)
         .where(col("o_orderkey") % 17 === 6)
         .select(col("o_orderkey").as("okey"),
@@ -317,13 +506,36 @@ object Round12dOps extends Family {
           expr("CAST(dow0 AS BIGINT)").as("dow0"),
           col("engine_dow0"), col("agree"))
         .orderBy("okey")
-    }),
+    },
+      // Same anchors, same month table, engine dow already 0=Sunday here.
+      """WITH b AS (SELECT o_orderkey AS okey,
+        |    CAST(o_orderdate AS DATE) AS dt
+        |  FROM orders WHERE o_orderkey % 17 = 6),
+        |f AS (SELECT *, EXTRACT(year FROM dt) AS y,
+        |    EXTRACT(month FROM dt) AS m, EXTRACT(day FROM dt) AS dd
+        |  FROM b),
+        |l AS (SELECT *, (y % 4 = 0 AND y % 100 <> 0) OR y % 400 = 0
+        |    AS leap,
+        |    (3 + (y - 1900) + (y - 1900) // 4) % 7 AS anchor FROM f),
+        |dm AS (SELECT *, CASE m WHEN 1 THEN CASE WHEN leap THEN 4 ELSE 3 END
+        |    WHEN 2 THEN CASE WHEN leap THEN 29 ELSE 28 END
+        |    WHEN 3 THEN 7 WHEN 4 THEN 4 WHEN 5 THEN 9 WHEN 6 THEN 6
+        |    WHEN 7 THEN 11 WHEN 8 THEN 8 WHEN 9 THEN 5 WHEN 10 THEN 10
+        |    WHEN 11 THEN 7 ELSE 12 END AS doomdate FROM l)
+        |SELECT okey, CAST(dt AS STRING) AS dt, CAST(y AS BIGINT) AS y,
+        |  CAST(m AS BIGINT) AS m, CAST(dd AS BIGINT) AS dd,
+        |  CAST((anchor + ((dd - doomdate) % 7 + 7) % 7) % 7 AS BIGINT)
+        |    AS dow0,
+        |  CAST(dayofweek(dt) AS BIGINT) AS engine_dow0,
+        |  (anchor + ((dd - doomdate) % 7 + 7) % 7) % 7
+        |    = dayofweek(dt) AS agree
+        |FROM dm ORDER BY okey""".stripMargin),
 
     // Resistor color bands — 2 significant digits + multiplier mapped
     // through ONE shared color list (element_at / list indexing),
     // decoded back by array_position; ohms reconstructed through a
     // 5-rung power ladder. Per-row string/array algebra.
-    "fn_resistor_code" -> ((s, d) => {
+    Op("fn_resistor_code", (s, d) => {
       val colors = "array('black','brown','red','orange','yellow'," +
         "'green','blue','violet','grey','white')"
       Tables.part(s, d)
@@ -351,12 +563,36 @@ object Round12dOps extends Family {
         .select("pk", "sig", "expo", "band1", "band2", "band3", "ohms",
           "ohms_back")
         .orderBy("pk")
+    },
+      // Same color list, same power ladder, same roundtrip.
+      {
+      val colors = "['black','brown','red','orange','yellow'," +
+        "'green','blue','violet','grey','white']"
+      s"""WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+         |    CAST(p_partkey AS BIGINT) % 90 + 10 AS sig,
+         |    CAST(p_partkey AS BIGINT) % 5 AS expo
+         |  FROM part WHERE p_partkey % 43 = 17),
+         |e AS (SELECT *, $colors[CAST(sig // 10 AS INT) + 1] AS band1,
+         |    $colors[CAST(sig % 10 AS INT) + 1] AS band2,
+         |    $colors[CAST(expo AS INT) + 1] AS band3,
+         |    CASE expo WHEN 0 THEN 1 WHEN 1 THEN 10 WHEN 2 THEN 100
+         |      WHEN 3 THEN 1000 ELSE 10000 END AS mult
+         |  FROM b),
+         |r AS (SELECT *, (list_position($colors, band1) - 1) * 10
+         |    + (list_position($colors, band2) - 1) AS sig_back
+         |  FROM e)
+         |SELECT pk, sig, expo, band1, band2, band3,
+         |  sig * mult AS ohms,
+         |  CAST(sig_back * (CASE list_position($colors, band3) - 1
+         |    WHEN 0 THEN 1 WHEN 1 THEN 10 WHEN 2 THEN 100
+         |    WHEN 3 THEN 1000 ELSE 10000 END) AS BIGINT) AS ohms_back
+         |FROM r ORDER BY pk""".stripMargin
     }),
 
     // Seven-segment display cost — per-digit lit-segment counts through
     // ONE 10-char lookup literal ('6255456376'), totalled and maxed over
     // the 12 unrolled digit probes of the code.
-    "fn_seven_segment" -> ((s, d) => {
+    Op("fn_seven_segment", (s, d) => {
       val segs = "6255456376"
       val probes = (1 to 12).map(i =>
         s"CAST(SUBSTRING('$segs', CAST(SUBSTRING(code12, $i, 1) AS INT) + 1," +
@@ -371,12 +607,25 @@ object Round12dOps extends Family {
           s"GREATEST(${probes.mkString(", ")})"))
         .select("okey", "code12", "total_segments", "max_digit_segments")
         .orderBy("okey")
+    },
+      // Same lookup literal, same 12 probes.
+      {
+      val probes = (1 to 12).map(i =>
+        s"CAST(SUBSTRING('6255456376', CAST(SUBSTRING(code12, $i, 1) " +
+          s"AS INT) + 1, 1) AS BIGINT)")
+      s"""WITH b AS (SELECT o_orderkey AS okey,
+         |    LPAD(CAST(o_orderkey * 67 + 1 AS STRING), 12, '0') AS code12
+         |  FROM orders WHERE o_orderkey % 41 = 19)
+         |SELECT okey, code12,
+         |  ${probes.mkString(" + ")} AS total_segments,
+         |  GREATEST(${probes.mkString(", ")}) AS max_digit_segments
+         |FROM b ORDER BY okey""".stripMargin
     }),
 
     // Logistic map in fixed-point micro — x' = r·x·(10⁶−x) DIV 10⁹ with
     // r in milli (2.5–4.0), ten unrolled named steps: the chaos ledger
     // both engines must reproduce bit-for-bit. Per-row arithmetic only.
-    "fn_logistic_map" -> ((s, d) => {
+    Op("fn_logistic_map", (s, d) => {
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 47 === 21)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -388,12 +637,24 @@ object Round12dOps extends Family {
       walked
         .select("pk", "r_milli", "x0", "x1", "x2", "x3", "x10")
         .orderBy("pk")
+    },
+      // Same fixed-point recurrence, nested one SELECT per step.
+      {
+      val walked = (0 until 10).foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 1500 + 2500 AS r_milli, " +
+          "(CAST(p_partkey AS BIGINT) * 7 % 900 + 50) * 1000 AS x0 " +
+          "FROM part WHERE p_partkey % 47 = 21)") { (prev, k) =>
+        s"(SELECT *, r_milli * x$k * (1000000 - x$k) // 1000000000 " +
+          s"AS x${k + 1} FROM $prev)" }
+      s"""SELECT pk, r_milli, x0, x1, x2, x3, x10
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Coppock curve — linear-weighted MA (10..1) of ROC14+ROC11 ppm
     // (sign-split everywhere: momentum can be negative, closes are
     // positive by data contract), full-window gated. One sort.
-    "win_coppock" -> ((s, d) => {
+    Op("win_coppock", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       def roc(k: Int, dst: String)(df: DataFrame): DataFrame =
         df.withColumn(s"c$k", lag("c", k).over(ord))
@@ -420,13 +681,40 @@ object Round12dOps extends Family {
           "CASE WHEN wnum < 0 THEN -((-wnum) DIV 55) ELSE wnum DIV 55 END"))
         .select("event_type", "day", "c", "mom", "coppock_ppm")
         .orderBy("event_type", "day")
+    },
+      // Same ROC pair, same linear weights, same sign splits.
+      {
+      def roc(k: Int, dst: String) =
+        s"""CASE WHEN lag(c, $k) OVER o IS NULL THEN NULL
+           |  WHEN c - lag(c, $k) OVER o < 0
+           |    THEN -((lag(c, $k) OVER o - c) * 1000000 // lag(c, $k) OVER o)
+           |  ELSE (c - lag(c, $k) OVER o) * 1000000 // lag(c, $k) OVER o
+           |END AS $dst""".stripMargin
+      val wsum = (0 until 10).map(i =>
+        s"COALESCE(lag(mom, $i) OVER o * ${10 - i}, 0)").mkString(" + ")
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+         |    epoch_us(ts) // 86400000000 AS day,
+         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+         |bar AS (SELECT event_type, day,
+         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+         |  FROM e GROUP BY 1, 2),
+         |r AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
+         |    ${roc(14, "roc14")}, ${roc(11, "roc11")}
+         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |m AS (SELECT *, roc14 + roc11 AS mom FROM r),
+         |w AS (SELECT *, $wsum AS wnum
+         |  FROM m WINDOW o AS (PARTITION BY event_type ORDER BY day))
+         |SELECT event_type, day, c, mom,
+         |  CASE WHEN wnum < 0 THEN -((-wnum) // 55) ELSE wnum // 55 END
+         |    AS coppock_ppm
+         |FROM w WHERE rn >= 24 ORDER BY event_type, day""".stripMargin
     }),
 
     // IBAN check digits (DE) — ISO 7064 mod-97 over the rearranged
     // 24-digit numeral computed by CHUNKED Horner (4×6-digit steps, so
     // nothing exceeds 97·10⁶); the full 26-digit validation walk (BBAN ‖
     // 1314 ‖ check) must land on 1, graded. Per-row digit algebra.
-    "fn_iban_check" -> ((s, d) => {
+    Op("fn_iban_check", (s, d) => {
       def chunks(src: String, widths: Seq[Int], pfx: String): Seq[(String, String)] = {
         var off = 1
         widths.zipWithIndex.map { case (w, i) =>
@@ -457,12 +745,44 @@ object Round12dOps extends Family {
         .withColumn("valid", expr(s"${vld.last._1} = 1"))
         .select("okey", "bban", "chk", "iban", "valid")
         .orderBy("okey")
+    },
+      // Same chunked Horner walks, same validation landing on 1.
+      {
+      def chunks(src: String, widths: Seq[Int], pfx: String) = {
+        var off = 1
+        widths.zipWithIndex.map { case (w, i) =>
+          val c = s"CAST(SUBSTRING($src, $off, $w) AS BIGINT)"
+          val prev = if (i == 0) "0" else s"$pfx${i - 1}"
+          off += w
+          s"$pfx$i" -> s"($prev * ${math.pow(10, w).toLong} + $c) % 97"
+        }
+      }
+      val gen = chunks("gen24", Seq(6, 6, 6, 6), "g")
+      val vld = chunks("val24", Seq(6, 6, 6, 6), "v")
+      val genWalked = gen.foldLeft(
+        "(SELECT o_orderkey AS okey, " +
+          "LPAD(CAST(o_orderkey * 73 + 11 AS STRING), 18, '0') AS bban, " +
+          "CONCAT(LPAD(CAST(o_orderkey * 73 + 11 AS STRING), 18, '0'), " +
+          "'131400') AS gen24 " +
+          "FROM orders WHERE o_orderkey % 43 = 21)") {
+        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
+      val withChk =
+        s"""(SELECT *, 98 - ${gen.last._1} AS chk,
+           |  CONCAT('DE', LPAD(CAST(98 - ${gen.last._1} AS STRING), 2, '0'),
+           |    bban) AS iban,
+           |  CONCAT(bban, '1314',
+           |    LPAD(CAST(98 - ${gen.last._1} AS STRING), 2, '0')) AS val24
+           |FROM $genWalked)""".stripMargin
+      val valWalked = vld.foldLeft(withChk) {
+        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
+      s"""SELECT okey, bban, chk, iban, ${vld.last._1} = 1 AS valid
+         |FROM $valWalked ORDER BY okey""".stripMargin
     }),
 
     // Rescaled-range (R/S) statistic — the Hurst-analysis kernel with NO
     // float: n-scaled deviations, running cumdev range R·n, σ·n from the
     // native IntSqrt, R/S = R_n·1000 DIV sd_n exact milli per series.
-    "agg_hurst_rs" -> ((s, d) => {
+    Op("agg_hurst_rs", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val all = Window.partitionBy("event_type")
@@ -485,13 +805,37 @@ object Round12dOps extends Family {
           "CASE WHEN sd_n = 0 THEN 0L ELSE r_n * 1000 DIV sd_n END"))
         .select("event_type", "n", "r_n", "sd_n", "rs_milli")
         .orderBy("event_type")
-    }),
+    },
+      // Same n-scaled range, same corrected-root denominator.
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+         |    epoch_us(ts) // 86400000000 AS day,
+         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+         |bar AS (SELECT event_type, day,
+         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+         |  FROM e GROUP BY 1, 2),
+         |dv AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
+         |      AS BIGINT) AS n,
+         |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm
+         |  FROM bar),
+         |cd AS (SELECT *, CAST(SUM(n * c - sm) OVER (PARTITION BY
+         |      event_type ORDER BY day ROWS UNBOUNDED PRECEDING)
+         |      AS BIGINT) AS cumdev FROM dv),
+         |agg AS (SELECT event_type, MAX(n) AS n,
+         |    MAX(cumdev) - MIN(cumdev) AS r_n, MAX(sm) AS sm,
+         |    CAST(SUM(c * c) AS BIGINT) AS ssq
+         |  FROM cd GROUP BY event_type),
+         |sq AS (SELECT *, ${Round12cOps.duckIsqrt("n * ssq - sm * sm")}
+         |    AS sd_n FROM agg)
+         |SELECT event_type, n, r_n, sd_n,
+         |  CASE WHEN sd_n = 0 THEN 0 ELSE r_n * 1000 // sd_n END
+         |    AS rs_milli
+         |FROM sq ORDER BY event_type""".stripMargin),
 
     // Multimodal keyframe/sampling plan — fps from a literal rate list,
     // duration → total frames, 2-second GOP keyframe count, and the
     // 16-target stride sample, all ceil-DIV arithmetic. The video-side
     // dataloader ledger; embarrassingly parallel.
-    "mm_keyframe_plan" -> ((s, d) => {
+    Op("mm_keyframe_plan", (s, d) => {
       Tables.documents(s, d)
         .select(col("doc_id"))
         .withColumn("fps", expr(
@@ -509,12 +853,24 @@ object Round12dOps extends Family {
         .select("doc_id", "fps", "dur_ms", "total_frames", "n_keyframes",
           "stride", "n_sampled")
         .orderBy("doc_id")
-    }),
+    },
+      // Same rate list, same ceil-DIV ledger.
+      """WITH b AS (SELECT doc_id,
+        |    [24, 25, 30, 50, 60][CAST(doc_id % 5 AS INT) + 1] AS fps,
+        |    doc_id * 37 % 60000 + 5000 AS dur_ms FROM documents),
+        |f AS (SELECT *, fps * dur_ms // 1000 AS total_frames,
+        |    fps * 2 AS gop FROM b),
+        |g AS (SELECT *, (total_frames + gop - 1) // gop AS n_keyframes,
+        |    GREATEST(total_frames // 16, 1) AS stride FROM f)
+        |SELECT doc_id, CAST(fps AS BIGINT) AS fps, dur_ms, total_frames,
+        |  n_keyframes, CAST(stride AS BIGINT) AS stride,
+        |  (total_frames + stride - 1) // stride AS n_sampled
+        |FROM g ORDER BY doc_id""".stripMargin),
 
     // Quartile coefficient of dispersion — rank-exact lower quartiles
     // (ranks (n+1) DIV 4 and 3(n+1) DIV 4, clamped), IQR and
     // (Q3−Q1)/(Q3+Q1) ppm on positive-shifted cents. Float-free spread.
-    "agg_quartile_dispersion" -> ((s, d) => {
+    Op("agg_quartile_dispersion", (s, d) => {
       val byC = Window.partitionBy("seg").orderBy("cents", "c_custkey")
       val all = Window.partitionBy("seg")
       Tables.customer(s, d)
@@ -535,11 +891,29 @@ object Round12dOps extends Family {
         .withColumn("qcd_ppm", expr("(q3 - q1) * 1000000 DIV (q3 + q1)"))
         .select("seg", "n", "q1", "q3", "iqr", "qcd_ppm")
         .orderBy("seg")
-    }),
+    },
+      // Same clamped rank quartiles, same ppm spread.
+      """WITH c AS (SELECT c_custkey, c_mktsegment AS seg,
+        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
+        |  FROM customer),
+        |r AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY seg) AS BIGINT)
+        |      AS n,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY seg
+        |      ORDER BY cents, c_custkey) AS BIGINT) AS rk
+        |  FROM c),
+        |q AS (SELECT *, MAX(CASE WHEN rk = GREATEST((n + 1) // 4, 1)
+        |      THEN cents END) OVER (PARTITION BY seg) AS q1,
+        |    MAX(CASE WHEN rk = LEAST(3 * (n + 1) // 4, n)
+        |      THEN cents END) OVER (PARTITION BY seg) AS q3
+        |  FROM r)
+        |SELECT seg, MAX(n) AS n, MAX(q1) AS q1, MAX(q3) AS q3,
+        |  MAX(q3) - MAX(q1) AS iqr,
+        |  (MAX(q3) - MAX(q1)) * 1000000 // (MAX(q3) + MAX(q1)) AS qcd_ppm
+        |FROM q GROUP BY seg ORDER BY seg""".stripMargin),
 
     // Chande momentum oscillator — 14-bar up-sum vs down-sum,
     // CMO = (U−D)·10⁶/(U+D) sign-split; one sort, one gain/loss split.
-    "win_cmo" -> ((s, d) => {
+    Op("win_cmo", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w14 = ord.rowsBetween(-13, 0)
       Tables.events(s, d)
@@ -561,13 +935,34 @@ object Round12dOps extends Family {
             |  ELSE (up - dn) * 1000000 DIV (up + dn) END""".stripMargin))
         .select("event_type", "day", "up", "dn", "cmo_ppm")
         .orderBy("event_type", "day")
-    }),
+    },
+      // Same 14-bar gain/loss split, same sign-split ratio.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, day,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+        |  FROM e GROUP BY 1, 2),
+        |r AS (SELECT *, c - lag(c, 1) OVER o AS r,
+        |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
+        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+        |ud AS (SELECT *,
+        |    CAST(SUM(CASE WHEN r > 0 THEN r ELSE 0 END)
+        |      OVER (o ROWS 13 PRECEDING) AS BIGINT) AS up,
+        |    CAST(SUM(CASE WHEN r < 0 THEN -r ELSE 0 END)
+        |      OVER (o ROWS 13 PRECEDING) AS BIGINT) AS dn
+        |  FROM r WINDOW o AS (PARTITION BY event_type ORDER BY day))
+        |SELECT event_type, day, up, dn,
+        |  CASE WHEN up + dn = 0 THEN 0
+        |    WHEN up < dn THEN -((dn - up) * 1000000 // (up + dn))
+        |    ELSE (up - dn) * 1000000 // (up + dn) END AS cmo_ppm
+        |FROM ud WHERE rn >= 15 ORDER BY event_type, day""".stripMargin),
 
     // RLE compressibility audit — run counts of o_orderstatus under the
     // physical key order vs re-sorted by (status, key): the layout
     // decision (sort-before-write) quantified as exact run ratios; the
     // planning signal that matters when 100 TB hits the encoder.
-    "warehouse_rle_estimate" -> ((s, d) => {
+    Op("warehouse_rle_estimate", (s, d) => {
       // Both run counts avoid a global sort (the agg_ks_test banded law):
       // by-key runs count per-2²⁰-key-band under a partitioned lag and
       // cancel boundary starts where the previous PRESENT band ends on
@@ -602,12 +997,31 @@ object Round12dOps extends Family {
           "runs_sorted * 1000000 DIV n"))
         .select("n", "runs_by_key", "runs_sorted", "ratio_key_ppm",
           "ratio_sorted_ppm")
-    }),
+    },
+      // Same run counts under both orderings.
+      """WITH o AS (SELECT o_orderkey, o_orderstatus AS st FROM orders
+        |  WHERE o_orderkey % 3 = 0),
+        |b AS (SELECT *,
+        |    CASE WHEN lag(st, 1) OVER (ORDER BY o_orderkey) IS NULL
+        |      OR lag(st, 1) OVER (ORDER BY o_orderkey) <> st
+        |      THEN 1 ELSE 0 END AS brk_key,
+        |    CASE WHEN lag(st, 1) OVER (ORDER BY st, o_orderkey) IS NULL
+        |      OR lag(st, 1) OVER (ORDER BY st, o_orderkey) <> st
+        |      THEN 1 ELSE 0 END AS brk_sorted
+        |  FROM o)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(brk_key) AS BIGINT) AS runs_by_key,
+        |  CAST(SUM(brk_sorted) AS BIGINT) AS runs_sorted,
+        |  CAST(SUM(brk_key) AS BIGINT) * 1000000 // COUNT(*)
+        |    AS ratio_key_ppm,
+        |  CAST(SUM(brk_sorted) AS BIGINT) * 1000000 // COUNT(*)
+        |    AS ratio_sorted_ppm
+        |FROM b""".stripMargin),
 
     // Delta-encoding width audit — per 10k-key block the max key delta
     // under sort, its bit width by a 14-rung CASE ladder, and the ppm
     // saving vs raw 64-bit storage; the other half of the layout audit.
-    "warehouse_delta_estimate" -> ((s, d) => {
+    Op("warehouse_delta_estimate", (s, d) => {
       val ladder = (13 to 0 by -1).map(k =>
         s"WHEN max_delta >= ${1L << k} THEN ${k + 1}L")
         .mkString("CASE ", " ", " ELSE 1L END")
@@ -624,13 +1038,32 @@ object Round12dOps extends Family {
         .withColumn("saving_ppm", expr("(64 - bits) * 1000000 DIV 64"))
         .select("blk", "n", "max_delta", "bits", "saving_ppm")
         .orderBy("blk")
+    },
+      // Same block deltas, same bit ladder.
+      {
+      val ladder = (13 to 0 by -1).map(k =>
+        s"WHEN max_delta >= ${1L << k} THEN ${k + 1}")
+        .mkString("CASE ", " ", " ELSE 1 END")
+      s"""WITH o AS (SELECT o_orderkey, o_orderkey // 10000 AS blk
+         |  FROM orders),
+         |dl AS (SELECT *, o_orderkey - lag(o_orderkey, 1)
+         |    OVER (PARTITION BY blk ORDER BY o_orderkey) AS delta
+         |  FROM o),
+         |a AS (SELECT blk, CAST(COUNT(*) AS BIGINT) AS n,
+         |    MAX(delta) AS max_delta
+         |  FROM dl GROUP BY blk),
+         |f AS (SELECT *, CAST($ladder AS BIGINT) AS bits
+         |  FROM a WHERE n > 1)
+         |SELECT blk, n, max_delta, bits,
+         |  (64 - bits) * 1000000 // 64 AS saving_ppm
+         |FROM f ORDER BY blk""".stripMargin
     }),
 
     // Chinese-remainder roundtrip (moduli 7·11·13 = 1001) — residues
     // recombined through the precomputed Bézout constants 715/364/924,
     // reconstruction == original graded for every v < 1001. Pure
     // modular algebra, the shard-and-reassemble number-theory shape.
-    "fn_crt_roundtrip" -> ((s, d) => {
+    Op("fn_crt_roundtrip", (s, d) => {
       Tables.part(s, d)
         .where(col("p_partkey") % 7 === 4)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -643,13 +1076,23 @@ object Round12dOps extends Family {
         .withColumn("roundtrip", expr("v_back = v"))
         .select("pk", "v", "r7", "r11", "r13", "v_back", "roundtrip")
         .orderBy("pk")
-    }),
+    },
+      // Same Bézout recombination.
+      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+        |    CAST(p_partkey AS BIGINT) % 1001 AS v
+        |  FROM part WHERE p_partkey % 7 = 4)
+        |SELECT pk, v, v % 7 AS r7, v % 11 AS r11, v % 13 AS r13,
+        |  ((v % 7) * 715 + (v % 11) * 364 + (v % 13) * 924) % 1001
+        |    AS v_back,
+        |  ((v % 7) * 715 + (v % 11) * 364 + (v % 13) * 924) % 1001 = v
+        |    AS roundtrip
+        |FROM b ORDER BY pk""".stripMargin),
 
     // Barycentric coordinates vs a literal triangle — the three signed
     // doubled sub-areas as EXACT integer cross products (numerators) over
     // the fixed doubled area (denominator); inside ⟺ all numerators share
     // the triangle's orientation sign; λ-sum identity graded.
-    "fn_barycentric_coords" -> ((s, d) => {
+    Op("fn_barycentric_coords", (s, d) => {
       // triangle A(20,20) B(180,40) C(90,180); doubled area =
       // (B−A)×(C−A) = 160·160 − 20·70 = 24200
       Tables.part(s, d)
@@ -667,12 +1110,25 @@ object Round12dOps extends Family {
         .withColumn("inside", expr("la >= 0 AND lb >= 0 AND lc >= 0"))
         .select("pk", "px", "py", "la", "lb", "lc", "denom", "inside")
         .orderBy("pk")
-    }),
+    },
+      // Same cross products, same orientation test.
+      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+        |    CAST(p_partkey AS BIGINT) * 17 % 200 AS px,
+        |    CAST(p_partkey AS BIGINT) * 31 % 200 AS py
+        |  FROM part WHERE p_partkey % 11 = 9),
+        |l AS (SELECT *,
+        |    (180 - px) * (180 - py) - (90 - px) * (40 - py) AS la,
+        |    (90 - px) * (20 - py) - (20 - px) * (180 - py) AS lb,
+        |    (20 - px) * (40 - py) - (180 - px) * (20 - py) AS lc
+        |  FROM b)
+        |SELECT pk, px, py, la, lb, lc, CAST(24200 AS BIGINT) AS denom,
+        |  la >= 0 AND lb >= 0 AND lc >= 0 AS inside
+        |FROM l ORDER BY pk""".stripMargin),
 
     // Heron's formula, integer form — 16A² = (a+b+c)(−a+b+c)(a−b+c)
     // (a+b−c) for sides built to satisfy the triangle inequality by
     // construction; floor area via the native IntSqrt (A = √(16A²)/4).
-    "fn_heron_area" -> ((s, d) => {
+    Op("fn_heron_area", (s, d) => {
       Tables.part(s, d)
         .where(col("p_partkey") % 13 === 8)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -684,13 +1140,25 @@ object Round12dOps extends Family {
         .withColumn("area_floor", expr("isqrt(area16) DIV 4"))
         .select("pk", "a", "b", "c", "area16", "area_floor")
         .orderBy("pk")
-    }),
+    },
+      // Same integer Heron product, same corrected-root floor.
+      s"""WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+         |    CAST(p_partkey AS BIGINT) % 50 + 50 AS a,
+         |    CAST(p_partkey AS BIGINT) * 3 % 50 + 50 AS b,
+         |    CAST(p_partkey AS BIGINT) * 7 % 50 + 50 AS c
+         |  FROM part WHERE p_partkey % 13 = 8),
+         |h AS (SELECT *,
+         |    (a + b + c) * (b + c - a) * (a - b + c) * (a + b - c)
+         |      AS area16 FROM b)
+         |SELECT pk, a, b, c, area16,
+         |  ${Round12cOps.duckIsqrt("area16")} // 4 AS area_floor
+         |FROM h ORDER BY pk""".stripMargin),
 
     // Detrended price oscillator — close minus the 11-bar SMA shifted 6
     // bars back (the cycle extractor, n/2+1 law); closes are positive by
     // data contract so the SMA DIV needs no sign split, the DPO
     // difference is plain subtraction. rn-gated to full windows.
-    "win_dpo" -> ((s, d) => {
+    Op("win_dpo", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w11 = ord.rowsBetween(-10, 0)
       Tables.events(s, d)
@@ -707,12 +1175,27 @@ object Round12dOps extends Family {
         .withColumn("dpo", col("c") - col("sma_shift"))
         .select("event_type", "day", "c", "sma_shift", "dpo")
         .orderBy("event_type", "day")
-    }),
+    },
+      // Same truncating SMA, same 11-bar shift.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, day,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+        |  FROM e GROUP BY 1, 2),
+        |w AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
+        |    CAST(SUM(c) OVER (o ROWS 10 PRECEDING) AS BIGINT) // 11
+        |      AS sma11
+        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+        |s AS (SELECT *, lag(sma11, 6) OVER o AS sma_shift
+        |  FROM w WINDOW o AS (PARTITION BY event_type ORDER BY day))
+        |SELECT event_type, day, c, sma_shift, c - sma_shift AS dpo
+        |FROM s WHERE rn >= 17 ORDER BY event_type, day""".stripMargin),
 
     // Modular inverse by Fermat — v^(p−2) mod p for the prime 1000003,
     // square-and-multiply as ~30 named step columns (every step < p² ≈
     // 10¹² inside int64); v·inv ≡ 1 graded per row.
-    "fn_modinv_fermat" -> ((s, d) => {
+    Op("fn_modinv_fermat", (s, d) => {
       val steps = modPowSteps("v", 1000001, 1000003L, "w")
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 53 === 23)
@@ -725,13 +1208,25 @@ object Round12dOps extends Family {
         .withColumn("check_one", expr("v * inv % 1000003"))
         .select("pk", "v", "inv", "check_one")
         .orderBy("pk")
+    },
+      // Same step chain through the same generator.
+      {
+      val steps = modPowSteps("v", 1000001, 1000003L, "w")
+      val walked = steps.foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 1000002 + 1 AS v " +
+          "FROM part WHERE p_partkey % 53 = 23)") {
+        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
+      s"""SELECT pk, v, ${steps.last._1} AS inv,
+         |  v * ${steps.last._1} % 1000003 AS check_one
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Zeckendorf representation — greedy Fibonacci decomposition against
     // 21 literal Fibonacci numbers (descending), remainder chain as
     // named columns; the no-two-adjacent-terms theorem is graded via the
     // mask (mask & mask·2 = 0 in base arithmetic) and the sum identity.
-    "fn_zeckendorf" -> ((s, d) => {
+    Op("fn_zeckendorf", (s, d) => {
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 17 === 2)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -760,12 +1255,35 @@ object Round12dOps extends Family {
           s"rem$n = 0"))
         .select("pk", "v", "mask", "nterms", "no_adjacent")
         .orderBy("pk")
+    },
+      // Same greedy walk over the same literal Fibonacci list.
+      {
+      val walked = ZeckFibs.zipWithIndex.foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 75025 AS v, " +
+          "CAST(p_partkey AS BIGINT) % 75025 AS rem0, " +
+          "CAST(0 AS BIGINT) AS mask0, CAST(0 AS BIGINT) AS nterms0 " +
+          "FROM part WHERE p_partkey % 17 = 2)") {
+        case (prev, (f, i)) =>
+          s"""(SELECT *, CASE WHEN rem$i >= $f THEN 1 ELSE 0 END
+             |    AS take${i + 1},
+             |  rem$i - (CASE WHEN rem$i >= $f THEN 1 ELSE 0 END) * $f
+             |    AS rem${i + 1},
+             |  mask$i * 2 + (CASE WHEN rem$i >= $f THEN 1 ELSE 0 END)
+             |    AS mask${i + 1},
+             |  nterms$i + (CASE WHEN rem$i >= $f THEN 1 ELSE 0 END)
+             |    AS nterms${i + 1}
+             |FROM $prev)""".stripMargin }
+      val n = ZeckFibs.length
+      s"""SELECT pk, v, CAST(mask$n AS BIGINT) AS mask,
+         |  CAST(nterms$n AS BIGINT) AS nterms, rem$n = 0 AS no_adjacent
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Collatz trajectories for seeds ≤ 26 (all terminate within 23
     // steps) — 24 unrolled CASE steps, stopping time = count of
     // above-one states; spec replays the full imperative orbit.
-    "fn_collatz_steps" -> ((s, d) => {
+    Op("fn_collatz_steps", (s, d) => {
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 19 === 3)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -783,13 +1301,30 @@ object Round12dOps extends Family {
           s"GREATEST(${(0 to 24).map(k => s"x$k").mkString(", ")})"))
         .select("pk", "x0", "steps", "peak", "reached_one")
         .orderBy("pk")
+    },
+      // Same 24 unrolled orbit steps.
+      {
+      val walked = (0 until 24).foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 26 + 1 AS x0 " +
+          "FROM part WHERE p_partkey % 19 = 3)") { (prev, k) =>
+        s"(SELECT *, CASE WHEN x$k = 1 THEN 1 WHEN x$k % 2 = 0 " +
+          s"THEN x$k // 2 ELSE 3 * x$k + 1 END AS x${k + 1} FROM $prev)" }
+      s"""SELECT pk, x0,
+         |  CAST(${(0 until 24).map(k =>
+        s"(CASE WHEN x$k > 1 THEN 1 ELSE 0 END)").mkString(" + ")}
+         |    AS BIGINT) AS steps,
+         |  CAST(GREATEST(${(0 to 24).map(k => s"x$k").mkString(", ")})
+         |    AS BIGINT) AS peak,
+         |  x24 = 1 AS reached_one
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Negabinary (base −2) roundtrip — 18 digit extractions d = v mod 2
     // with the EXACT even division (v−d)/(−2) (floor == trunc when the
     // dividend is even, so the dialects agree without sign-splitting),
     // reconstruction via alternating powers.
-    "fn_negabinary" -> ((s, d) => {
+    Op("fn_negabinary", (s, d) => {
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 23 === 7)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -809,12 +1344,31 @@ object Round12dOps extends Family {
         .withColumn("roundtrip", expr("v_back = v AND t18 = 0"))
         .select("pk", "v", "v_back", "digits_sum", "roundtrip")
         .orderBy("pk")
+    },
+      // Same even-division digit chain, same alternating powers.
+      {
+      val walked = (0 until 18).foldLeft(
+        "(SELECT pk, v, v AS t0 FROM (SELECT " +
+          "CAST(p_partkey AS BIGINT) AS pk, " +
+          "(CAST(p_partkey AS BIGINT) * 13 % 30000) * " +
+          "(CASE WHEN p_partkey % 2 = 0 THEN 1 ELSE -1 END) AS v " +
+          "FROM part WHERE p_partkey % 23 = 7))") { (prev, k) =>
+        s"(SELECT *, ((t$k % 2) + 2) % 2 AS d$k, " +
+          s"(t$k - ((t$k % 2) + 2) % 2) // -2 AS t${k + 1} FROM $prev)" }
+      val recon = (0 until 18).map { k =>
+        val p = if (k % 2 == 0) 1L << k else -(1L << k)
+        s"d$k * ($p)" }.mkString(" + ")
+      s"""SELECT pk, v, CAST($recon AS BIGINT) AS v_back,
+         |  CAST(${(0 until 18).map(k => s"d$k").mkString(" + ")} AS BIGINT)
+         |    AS digits_sum,
+         |  $recon = v AND t18 = 0 AS roundtrip
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Mean absolute deviation about the MEAN — Σ|n·x−S|·1000 DIV n²
     // exact milli (the L1 dispersion twin of agg_integer_stddev, no
     // float, no root); per series.
-    "agg_mean_abs_dev" -> ((s, d) => {
+    Op("agg_mean_abs_dev", (s, d) => {
       val all = Window.partitionBy("event_type")
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
@@ -829,12 +1383,28 @@ object Round12dOps extends Family {
         .withColumn("mad_milli", expr("sad_n * 1000 DIV (n * n)"))
         .select("event_type", "n", "sad_n", "mad_milli")
         .orderBy("event_type")
-    }),
+    },
+      // Same n-scaled L1 sum.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, day,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+        |  FROM e GROUP BY 1, 2),
+        |dv AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
+        |      AS BIGINT) AS n,
+        |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm
+        |  FROM bar)
+        |SELECT event_type, MAX(n) AS n,
+        |  CAST(SUM(ABS(n * c - sm)) AS BIGINT) AS sad_n,
+        |  CAST(SUM(ABS(n * c - sm)) AS BIGINT) * 1000
+        |    // (MAX(n) * MAX(n)) AS mad_milli
+        |FROM dv GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // Happy-number orbit — 12 unrolled sum-of-squared-digits steps for
     // seeds < 1000 (every orbit reaches 1 or the 4-cycle within 12);
     // happy ⟺ any step hits 1 (absorbing). Pure digit algebra.
-    "fn_happy_number" -> ((s, d) => {
+    Op("fn_happy_number", (s, d) => {
       def sq(src: String) =
         s"($src DIV 100) * ($src DIV 100) + " +
           s"($src DIV 10 % 10) * ($src DIV 10 % 10) + " +
@@ -851,6 +1421,20 @@ object Round12dOps extends Family {
         .withColumn("h12", col("h12"))
         .select("pk", "h0", "h12", "happy")
         .orderBy("pk")
+    },
+      // Same 12 squared-digit steps, same absorbing test.
+      {
+      def sq(src: String) =
+        s"($src // 100) * ($src // 100) + " +
+          s"($src // 10 % 10) * ($src // 10 % 10) + ($src % 10) * ($src % 10)"
+      val walked = (0 until 12).foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 999 + 1 AS h0 " +
+          "FROM part WHERE p_partkey % 29 = 4)") { (prev, k) =>
+        s"(SELECT *, ${sq(s"h$k")} AS h${k + 1} FROM $prev)" }
+      s"""SELECT pk, h0, h12,
+         |  ${(0 to 12).map(k => s"h$k = 1").mkString(" OR ")} AS happy
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Kaprekar's 6174 routine — seven unrolled steps of desc−asc over
@@ -858,7 +1442,7 @@ object Round12dOps extends Family {
     // largest = GREATEST of pairwise LEASTs, rest by sum); repdigits
     // (which collapse to 0) filtered by construction. Convergence to
     // 6174 graded — Kaprekar's theorem says 7 steps always suffice.
-    "fn_kaprekar_6174" -> ((s, d) => {
+    Op("fn_kaprekar_6174", (s, d) => {
       def step(src: String, dst: String)(df: DataFrame): DataFrame =
         df.withColumn(s"${dst}_a", expr(s"$src DIV 1000"))
           .withColumn(s"${dst}_b", expr(s"$src DIV 100 % 10"))
@@ -894,12 +1478,45 @@ object Round12dOps extends Family {
           (1 to 7).map(k => s"k$k = 6174").mkString(" OR ")))
         .select("pk", "k0", "k7", "reached_6174")
         .orderBy("pk")
+    },
+      // Same closed-form 4-sort, same seven steps.
+      {
+      def step(src: String, dst: String) =
+        s"""(SELECT *, ${dst}_s4 * 1000 + ${dst}_s3 * 100 + ${dst}_s2 * 10
+           |    + ${dst}_s1 - (${dst}_s1 * 1000 + ${dst}_s2 * 100
+           |    + ${dst}_s3 * 10 + ${dst}_s4) AS $dst FROM
+           |  (SELECT *, ${dst}_a + ${dst}_b + ${dst}_c + ${dst}_d
+           |      - ${dst}_s1 - ${dst}_s3 - ${dst}_s4 AS ${dst}_s2 FROM
+           |    (SELECT *,
+           |      GREATEST(${dst}_a, ${dst}_b, ${dst}_c, ${dst}_d) AS ${dst}_s4,
+           |      LEAST(${dst}_a, ${dst}_b, ${dst}_c, ${dst}_d) AS ${dst}_s1,
+           |      GREATEST(LEAST(${dst}_a, ${dst}_b), LEAST(${dst}_a, ${dst}_c),
+           |        LEAST(${dst}_a, ${dst}_d), LEAST(${dst}_b, ${dst}_c),
+           |        LEAST(${dst}_b, ${dst}_d), LEAST(${dst}_c, ${dst}_d))
+           |        AS ${dst}_s3 FROM
+           |      (SELECT *, $src // 1000 AS ${dst}_a,
+           |        $src // 100 % 10 AS ${dst}_b, $src // 10 % 10 AS ${dst}_c,
+           |        $src % 10 AS ${dst}_d FROM """.stripMargin
+      // innermost query computes k1, outermost k7
+      val open = (6 to 0 by -1).map(k => step(s"k$k", s"k${k + 1}")).mkString
+      val base = "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+        "CAST(p_partkey AS BIGINT) % 9000 + 1000 AS k0 " +
+        "FROM part WHERE p_partkey % 31 = 11 AND NOT (" +
+        "(p_partkey % 9000 + 1000) // 1000 = (p_partkey % 9000 + 1000) // 100 % 10 AND " +
+        "(p_partkey % 9000 + 1000) // 100 % 10 = (p_partkey % 9000 + 1000) // 10 % 10 AND " +
+        "(p_partkey % 9000 + 1000) // 10 % 10 = (p_partkey % 9000 + 1000) % 10))"
+      // each step opens four nested SELECTs, all closed after the base
+      val closes = Seq.fill(7)("))))").mkString
+      s"""SELECT pk, k0, k7,
+         |  ${(1 to 7).map(k => s"k$k = 6174").mkString(" OR ")}
+         |    AS reached_6174
+         |FROM $open$base$closes ORDER BY pk""".stripMargin
     }),
 
     // Digital root + additive persistence — the closed form 1+(n−1)%9
     // graded against four unrolled digit-sum steps (persistence = count
     // of steps with a multi-digit state). Pure digit algebra.
-    "fn_digital_root" -> ((s, d) => {
+    Op("fn_digital_root", (s, d) => {
       def dsum(src: String) =
         s"$src DIV 100000 + $src DIV 10000 % 10 + $src DIV 1000 % 10 + " +
           s"$src DIV 100 % 10 + $src DIV 10 % 10 + $src % 10"
@@ -920,12 +1537,30 @@ object Round12dOps extends Family {
         .select("pk", "v", "root_closed", "root_walked", "persistence",
           "agree")
         .orderBy("pk")
+    },
+      // Same closed form vs the same walked steps.
+      {
+      def dsum(src: String) =
+        s"$src // 100000 + $src // 10000 % 10 + $src // 1000 % 10 + " +
+          s"$src // 100 % 10 + $src // 10 % 10 + $src % 10"
+      val walked = (0 until 4).foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) * 97 % 999999 + 1 AS v, " +
+          "CAST(p_partkey AS BIGINT) * 97 % 999999 + 1 AS g0 " +
+          "FROM part WHERE p_partkey % 37 = 5)") { (prev, k) =>
+        s"(SELECT *, ${dsum(s"g$k")} AS g${k + 1} FROM $prev)" }
+      s"""SELECT pk, v, 1 + (v - 1) % 9 AS root_closed, g4 AS root_walked,
+         |  CAST(${(0 until 4).map(k =>
+        s"(CASE WHEN g$k >= 10 THEN 1 ELSE 0 END)").mkString(" + ")}
+         |    AS BIGINT) AS persistence,
+         |  1 + (v - 1) % 9 = g4 AS agree
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // Coefficient of variation — σ/µ = isqrt(n·Σx²−S²)·1000 DIV S exact
     // milli through the native IntSqrt (the n-scalings cancel); per
     // segment on positive-shifted balances.
-    "agg_coeff_variation" -> ((s, d) => {
+    Op("agg_coeff_variation", (s, d) => {
       Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           (floor(col("c_acctbal")).cast("bigint") + 1000L).as("dollars"))
@@ -936,14 +1571,26 @@ object Round12dOps extends Family {
         .withColumn("cv_milli", expr("sd_n * 1000 DIV sm"))
         .select("seg", "n", "sm", "ssq", "sd_n", "cv_milli")
         .orderBy("seg")
-    }),
+    },
+      // Same corrected-root ratio.
+      s"""WITH c AS (SELECT c_mktsegment AS seg,
+         |    CAST(FLOOR(c_acctbal) AS BIGINT) + 1000 AS dollars
+         |  FROM customer),
+         |a AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(SUM(dollars) AS BIGINT) AS sm,
+         |    CAST(SUM(dollars * dollars) AS BIGINT) AS ssq
+         |  FROM c GROUP BY seg),
+         |sq AS (SELECT *, ${Round12cOps.duckIsqrt("n * ssq - sm * sm")}
+         |    AS sd_n FROM a)
+         |SELECT seg, n, sm, ssq, sd_n, sd_n * 1000 // sm AS cv_milli
+         |FROM sq ORDER BY seg""".stripMargin),
 
     // Aliquot sums via the √n divisor-pair sweep — explode the constant
     // 1..100 candidate list (100² ≥ the 10⁴ value cap), keep d with
     // d² ≤ n and d | n, sum d + n/d, correct the perfect-square double
     // count, subtract n itself; perfect/abundant/deficient classified.
     // Constant fan-out × distributed rows — the scale-safe shape.
-    "fn_aliquot_sum" -> ((s, d) => {
+    Op("fn_aliquot_sum", (s, d) => {
       Tables.part(s, d)
         .where(col("p_partkey") % 41 === 13)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -961,13 +1608,30 @@ object Round12dOps extends Family {
             |  ELSE 'DEFICIENT' END""".stripMargin))
         .select("pk", "n", "aliquot", "cls")
         .orderBy("pk")
-    }),
+    },
+      // Same divisor-pair sweep over the same constant list.
+      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+        |    CAST(p_partkey AS BIGINT) % 10000 + 2 AS n
+        |  FROM part WHERE p_partkey % 41 = 13),
+        |s AS (SELECT CAST(g AS BIGINT) AS dd
+        |  FROM generate_series(1, 100) AS gs(g)),
+        |pairs AS (SELECT pk, n, dd FROM b CROSS JOIN s
+        |  WHERE dd * dd <= n AND n % dd = 0),
+        |agg AS (SELECT pk, n,
+        |    CAST(SUM(dd + n // dd) AS BIGINT) AS pair_sum,
+        |    MAX(CASE WHEN dd * dd = n THEN dd ELSE 0 END) AS sq_dup
+        |  FROM pairs GROUP BY pk, n)
+        |SELECT pk, n, pair_sum - sq_dup - n AS aliquot,
+        |  CASE WHEN pair_sum - sq_dup - n = n THEN 'PERFECT'
+        |    WHEN pair_sum - sq_dup - n > n THEN 'ABUNDANT'
+        |    ELSE 'DEFICIENT' END AS cls
+        |FROM agg ORDER BY pk""".stripMargin),
 
     // Atkinson index (ε=2), the DECLARED truncating variant — A = 1 −
     // HM/AM with the harmonic mean through per-term 10⁹ DIV x
     // reciprocals (truncation is part of the metric's contract, applied
     // identically by both engines); inequality in exact ppm.
-    "agg_atkinson_eps2" -> ((s, d) => {
+    Op("agg_atkinson_eps2", (s, d) => {
       Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
           (floor(col("c_acctbal")).cast("bigint") + 1001L).as("dollars"))
@@ -982,12 +1646,25 @@ object Round12dOps extends Family {
         .select("seg", "n", "sm", "recip_sum", "hm_milli", "am_milli",
           "atkinson_ppm")
         .orderBy("seg")
-    }),
+    },
+      // Same declared truncating reciprocals, same ppm identities.
+      """WITH c AS (SELECT c_mktsegment AS seg,
+        |    CAST(FLOOR(c_acctbal) AS BIGINT) + 1001 AS dollars
+        |  FROM customer),
+        |a AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(SUM(dollars) AS BIGINT) AS sm,
+        |    CAST(SUM(1000000000 // dollars) AS BIGINT) AS recip_sum
+        |  FROM c GROUP BY seg),
+        |h AS (SELECT *, n * 1000000000 * 1000 // recip_sum AS hm_milli,
+        |    sm * 1000 // n AS am_milli FROM a)
+        |SELECT seg, n, sm, recip_sum, hm_milli, am_milli,
+        |  1000000 - hm_milli * 1000000 // am_milli AS atkinson_ppm
+        |FROM h ORDER BY seg""".stripMargin),
 
     // Psychological line — % of up days over the trailing 12 bars in
     // ppm; minimal by design but the census pattern (bool sum over a
     // bounded frame) is the one 100 TB sentiment rollups use.
-    "win_psy_line" -> ((s, d) => {
+    Op("win_psy_line", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w12 = ord.rowsBetween(-11, 0)
       Tables.events(s, d)
@@ -1005,12 +1682,28 @@ object Round12dOps extends Family {
         .withColumn("psy_ppm", expr("ups12 * 1000000 DIV 12"))
         .select("event_type", "day", "ups12", "psy_ppm")
         .orderBy("event_type", "day")
-    }),
+    },
+      // Same trailing up-census.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, day,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+        |  FROM e GROUP BY 1, 2),
+        |u AS (SELECT *, CASE WHEN c > lag(c, 1) OVER o THEN 1 ELSE 0 END
+        |      AS up,
+        |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
+        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+        |w AS (SELECT *, CAST(SUM(up) OVER (o ROWS 11 PRECEDING)
+        |      AS BIGINT) AS ups12
+        |  FROM u WINDOW o AS (PARTITION BY event_type ORDER BY day))
+        |SELECT event_type, day, ups12, ups12 * 1000000 // 12 AS psy_ppm
+        |FROM w WHERE rn >= 13 ORDER BY event_type, day""".stripMargin),
 
     // Percentage volume oscillator — bar volumes (event counts) through
     // the fast/slow weight-vector folds, PVO = (fast−slow)·10⁶/slow
     // sign-split; volumes positive so the folds need no splits.
-    "win_pvo" -> ((s, d) => {
+    Op("win_pvo", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val fast = Seq(8L, 4L, 2L, 1L)
       val slow = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
@@ -1039,12 +1732,40 @@ object Round12dOps extends Family {
         .select("event_type", "day", "vol", "ema_fast", "ema_slow",
           "pvo_ppm")
         .orderBy("event_type", "day")
+    },
+      // Same volume folds, same sign-split ratio.
+      {
+      def stage(w: Seq[Long], dst: String) = {
+        val num = w.zipWithIndex.map { case (wt, i) =>
+          if (i == 0) s"$wt * vol"
+          else s"COALESCE($wt * lag(vol, $i) OVER o, 0)" }.mkString(" + ")
+        val den = w.zipWithIndex.map { case (wt, i) =>
+          if (i == 0) s"$wt"
+          else s"CASE WHEN lag(vol, $i) OVER o IS NULL THEN 0 ELSE $wt END" }
+          .mkString(" + ")
+        s"SELECT *, ($num) // ($den) AS $dst"
+      }
+      s"""WITH bar AS (SELECT event_type,
+         |    epoch_us(ts) // 86400000000 AS day,
+         |    CAST(COUNT(*) AS BIGINT) AS vol
+         |  FROM events GROUP BY 1, 2),
+         |s1 AS (${stage(Seq(8L, 4L, 2L, 1L), "ema_fast")} FROM bar
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |s2 AS (${stage(Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L), "ema_slow")}
+         |  FROM s1 WINDOW o AS (PARTITION BY event_type ORDER BY day))
+         |SELECT event_type, day, vol, ema_fast, ema_slow,
+         |  CASE WHEN ema_slow = 0 THEN 0
+         |    WHEN ema_fast < ema_slow
+         |      THEN -((ema_slow - ema_fast) * 1000000 // ema_slow)
+         |    ELSE (ema_fast - ema_slow) * 1000000 // ema_slow
+         |  END AS pvo_ppm
+         |FROM s2 ORDER BY event_type, day""".stripMargin
     }),
 
     // BCD pack/unpack roundtrip — six decimal digits into nibbles
     // (Σdᵢ·16ⁱ) and back; the hardware-adjacent encoding as pure
     // place-value algebra, plus the BCD>binary expansion-factor check.
-    "fn_bcd_roundtrip" -> ((s, d) => {
+    Op("fn_bcd_roundtrip", (s, d) => {
       val pack = (0 until 6).map(i =>
         s"(v DIV ${math.pow(10, i).toLong} % 10) * ${1L << (4 * i)}")
         .mkString(" + ")
@@ -1061,13 +1782,29 @@ object Round12dOps extends Family {
         .withColumn("expanded", expr("bcd >= v"))
         .select("pk", "v", "bcd", "v_back", "roundtrip", "expanded")
         .orderBy("pk")
+    },
+      // Same nibble place values.
+      {
+      val pack = (0 until 6).map(i =>
+        s"(v // ${math.pow(10, i).toLong} % 10) * ${1L << (4 * i)}")
+        .mkString(" + ")
+      val unpack = (0 until 6).map(i =>
+        s"(bcd // ${1L << (4 * i)} % 16) * ${math.pow(10, i).toLong}")
+        .mkString(" + ")
+      s"""WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+         |    CAST(p_partkey AS BIGINT) * 131 % 1000000 AS v
+         |  FROM part WHERE p_partkey % 43 = 9),
+         |p AS (SELECT *, $pack AS bcd FROM b)
+         |SELECT pk, v, bcd, $unpack AS v_back,
+         |  ($unpack) = v AS roundtrip, bcd >= v AS expanded
+         |FROM p ORDER BY pk""".stripMargin
     }),
 
     // Excel column letters — bijective base 26 (no zero digit): four
     // unrolled d = (n−1)%26 / n = (n−1) DIV 26 extractions through ONE
     // alphabet literal, re-parsed by positional Horner. 1→A, 27→AA,
     // 703→AAA, the classic off-by-one trap done exactly.
-    "fn_excel_column" -> ((s, d) => {
+    Op("fn_excel_column", (s, d) => {
       val az = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 47 === 11)
@@ -1095,12 +1832,35 @@ object Round12dOps extends Family {
         .withColumn("roundtrip", expr("n_back = n"))
         .select("pk", "n", "col_name", "n_back", "roundtrip")
         .orderBy("pk")
+    },
+      // Same bijective digit walk, same Horner re-parse.
+      {
+      val az = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+      val walked = (0 until 4).foldLeft(
+        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 400000 + 1 AS n, " +
+          "CAST(p_partkey AS BIGINT) % 400000 + 1 AS m0 " +
+          "FROM part WHERE p_partkey % 47 = 11)") { (prev, k) =>
+        s"(SELECT *, CASE WHEN m$k = 0 THEN -1 ELSE (m$k - 1) % 26 END " +
+          s"AS d$k, CASE WHEN m$k = 0 THEN 0 ELSE (m$k - 1) // 26 END " +
+          s"AS m${k + 1} FROM $prev)" }
+      val name = (3 to 0 by -1).map(k =>
+        s"CASE WHEN d$k >= 0 THEN SUBSTRING('$az', CAST(d$k AS INT) + 1, 1)" +
+          s" ELSE '' END").mkString("CONCAT(", ", ", ")")
+      val back = (1 to 4).map(i =>
+        s"CASE WHEN LENGTH(col_name) >= $i THEN " +
+          s"INSTR('$az', SUBSTRING(col_name, LENGTH(col_name) - $i + 1, 1))" +
+          s" * ${math.pow(26, i - 1).toLong} ELSE 0 END").mkString(" + ")
+      s"""SELECT pk, n, col_name, CAST($back AS BIGINT) AS n_back,
+         |  CAST($back AS BIGINT) = n AS roundtrip
+         |FROM (SELECT *, $name AS col_name FROM $walked)
+         |ORDER BY pk""".stripMargin
     }),
 
     // Pareto 80/20 census — richest-first cumulative balance share per
     // segment: the head count needed to cover 80% of total, its
     // population share ppm; rank cumsum + first crossing.
-    "agg_pareto_8020" -> ((s, d) => {
+    Op("agg_pareto_8020", (s, d) => {
       val rich = Window.partitionBy("seg")
         .orderBy(col("cents").desc, col("c_custkey"))
       val cum = rich.rowsBetween(Window.unboundedPreceding,
@@ -1121,12 +1881,29 @@ object Round12dOps extends Family {
         .withColumn("head_share_ppm", expr("rk * 1000000 DIV n"))
         .select("seg", "n", "total", "rk", "head_share_ppm")
         .orderBy("seg")
-    }),
+    },
+      // Same richest-first crossing.
+      """WITH c AS (SELECT c_custkey, c_mktsegment AS seg,
+        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
+        |  FROM customer),
+        |r AS (SELECT *, CAST(SUM(cents) OVER (PARTITION BY seg)
+        |      AS BIGINT) AS total,
+        |    CAST(COUNT(*) OVER (PARTITION BY seg) AS BIGINT) AS n,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY seg
+        |      ORDER BY cents DESC, c_custkey) AS BIGINT) AS rk,
+        |    CAST(SUM(cents) OVER (PARTITION BY seg
+        |      ORDER BY cents DESC, c_custkey ROWS UNBOUNDED PRECEDING)
+        |      AS BIGINT) AS cum
+        |  FROM c),
+        |x AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY rk)
+        |    AS pick FROM r WHERE cum * 5 >= total * 4)
+        |SELECT seg, n, total, rk, rk * 1000000 // n AS head_share_ppm
+        |FROM x WHERE pick = 1 ORDER BY seg""".stripMargin),
 
     // ISBN-10 check character — Σ(i·dᵢ) mod 11 over nine unrolled digit
     // probes (the position-weighted mod-11 family member with the 'X'
     // eleventh symbol); full validation Σ(i·dᵢ)+10·chk ≡ 0 graded.
-    "fn_isbn10_check" -> ((s, d) => {
+    Op("fn_isbn10_check", (s, d) => {
       val wsum = (1 to 9).map(i =>
         s"$i * CAST(SUBSTRING(code9, $i, 1) AS BIGINT)").mkString(" + ")
       Tables.orders(s, d)
@@ -1141,6 +1918,22 @@ object Round12dOps extends Family {
         .withColumn("valid", expr(s"(($wsum) + 10 * rem) % 11 = 0"))
         .select("okey", "code9", "rem", "chk_char", "isbn10", "valid")
         .orderBy("okey")
+    },
+      // Same weighted mod-11, same X symbol.
+      {
+      val wsum = (1 to 9).map(i =>
+        s"$i * CAST(SUBSTRING(code9, $i, 1) AS BIGINT)").mkString(" + ")
+      s"""WITH b AS (SELECT o_orderkey AS okey,
+         |    LPAD(CAST(o_orderkey * 89 + 17 AS STRING), 9, '0') AS code9
+         |  FROM orders WHERE o_orderkey % 47 = 13),
+         |r AS (SELECT *, ($wsum) % 11 AS rem FROM b)
+         |SELECT okey, code9, rem,
+         |  CASE WHEN rem = 10 THEN 'X' ELSE CAST(rem AS STRING) END
+         |    AS chk_char,
+         |  CONCAT(code9, CASE WHEN rem = 10 THEN 'X'
+         |    ELSE CAST(rem AS STRING) END) AS isbn10,
+         |  (($wsum) + 10 * rem) % 11 = 0 AS valid
+         |FROM r ORDER BY okey""".stripMargin
     }),
 
     // Fibonacci–Sylvester greedy Egyptian fractions — three unrolled
@@ -1148,7 +1941,7 @@ object Round12dOps extends Family {
     // (p·c−q, q·c); numerators strictly decrease so three steps always
     // leave p₃ < p; the full reconstruction identity is spec-proved in
     // BigInt. q₃ ≤ ~10¹⁶ stays inside int64 by the q ≤ 99 cap.
-    "fn_egyptian_fraction" -> ((s, d) => {
+    Op("fn_egyptian_fraction", (s, d) => {
       val base = Tables.part(s, d)
         .where(col("p_partkey") % 53 === 31)
         .select(col("p_partkey").cast("bigint").as("pk"))
@@ -1164,12 +1957,32 @@ object Round12dOps extends Family {
       walked
         .select("pk", "p0", "q0", "c1", "c2", "c3", "p3", "q3")
         .orderBy("pk")
+    },
+      // Same greedy chain through nested per-step SELECTs.
+      {
+      val walked = (0 until 3).foldLeft(
+        "(SELECT pk, p0, q0 FROM (SELECT CAST(p_partkey AS BIGINT) AS pk, " +
+          "CAST(p_partkey AS BIGINT) % 98 + 2 AS q0, " +
+          "CAST(p_partkey AS BIGINT) * 7 % " +
+          "(CAST(p_partkey AS BIGINT) % 98 + 1) + 1 AS p0 " +
+          "FROM part WHERE p_partkey % 53 = 31))") { (prev, k) =>
+        s"(SELECT *, CASE WHEN p$k = 0 THEN 0 " +
+          s"ELSE (q$k + p$k - 1) // p$k END AS c${k + 1}, " +
+          s"CASE WHEN p$k = 0 THEN 0 ELSE p$k * (CASE WHEN p$k = 0 THEN 0 " +
+          s"ELSE (q$k + p$k - 1) // p$k END) - q$k END AS p${k + 1}, " +
+          s"CASE WHEN p$k = 0 THEN q$k ELSE q$k * (CASE WHEN p$k = 0 " +
+          s"THEN 0 ELSE (q$k + p$k - 1) // p$k END) END AS q${k + 1} " +
+          s"FROM $prev)" }
+      s"""SELECT pk, p0, q0, CAST(c1 AS BIGINT) AS c1,
+         |  CAST(c2 AS BIGINT) AS c2, CAST(c3 AS BIGINT) AS c3,
+         |  CAST(p3 AS BIGINT) AS p3, CAST(q3 AS BIGINT) AS q3
+         |FROM $walked ORDER BY pk""".stripMargin
     }),
 
     // True strength index — double-smoothed momentum over double-
     // smoothed |momentum| (two chained weight-vector folds on each),
     // sign-split ppm ratio; the zero-lag momentum family's ratio member.
-    "win_tsi" -> ((s, d) => {
+    Op("win_tsi", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
       def fold(src: String, dst: String, signSplit: Boolean)(
@@ -1208,12 +2021,52 @@ object Round12dOps extends Family {
             |  ELSE m2 * 1000000 DIV a2 END""".stripMargin))
         .select("event_type", "day", "mom", "m2", "a2", "tsi_ppm")
         .orderBy("event_type", "day")
+    },
+      // Same four folds, same sign-split ratio.
+      {
+      val w = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
+      def stage(src: String, dst: String, signSplit: Boolean) = {
+        val num = w.zipWithIndex.map { case (wt, i) =>
+          if (i == 0) s"$wt * $src"
+          else s"COALESCE($wt * lag($src, $i) OVER o, 0)" }.mkString(" + ")
+        val den = w.zipWithIndex.map { case (wt, i) =>
+          if (i == 0) s"$wt"
+          else s"CASE WHEN lag($src, $i) OVER o IS NULL THEN 0 ELSE $wt END" }
+          .mkString(" + ")
+        if (signSplit)
+          s"""SELECT *, CASE WHEN ($num) < 0
+             |    THEN -((-($num)) // ($den)) ELSE ($num) // ($den) END
+             |    AS $dst""".stripMargin
+        else s"SELECT *, ($num) // ($den) AS $dst"
+      }
+      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+         |    epoch_us(ts) // 86400000000 AS day,
+         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+         |bar AS (SELECT event_type, day,
+         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+         |  FROM e GROUP BY 1, 2),
+         |m AS (SELECT event_type, day, c - lag(c, 1) OVER o AS mom
+         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |mm AS (SELECT *, ABS(mom) AS amom FROM m WHERE mom IS NOT NULL),
+         |s1 AS (${stage("mom", "m1", signSplit = true)} FROM mm
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |s2 AS (${stage("m1", "m2", signSplit = true)} FROM s1
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |s3 AS (${stage("amom", "a1", signSplit = false)} FROM s2
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+         |s4 AS (${stage("a1", "a2", signSplit = false)} FROM s3
+         |  WINDOW o AS (PARTITION BY event_type ORDER BY day))
+         |SELECT event_type, day, mom, m2, a2,
+         |  CASE WHEN a2 = 0 THEN 0
+         |    WHEN m2 < 0 THEN -((-m2) * 1000000 // a2)
+         |    ELSE m2 * 1000000 // a2 END AS tsi_ppm
+         |FROM s4 ORDER BY event_type, day""".stripMargin
     }),
 
     // Hoover (Robin Hood) index — the share of total wealth that must
     // move to equalize: Σ|n·xᵢ−T| ppm over 2·n·T, all integers; the
     // third inequality metric next to Palma and Atkinson.
-    "agg_hoover_index" -> ((s, d) => {
+    Op("agg_hoover_index", (s, d) => {
       val all = Window.partitionBy("seg")
       Tables.customer(s, d)
         .select(col("c_mktsegment").as("seg"),
@@ -1230,12 +2083,26 @@ object Round12dOps extends Family {
             "DIV (CAST(2 AS DECIMAL(38,0)) * n * total) AS BIGINT)"))
         .select("seg", "n", "total", "sad_n", "hoover_ppm")
         .orderBy("seg")
-    }),
+    },
+      // Same n-scaled L1 numerator, same HUGEINT-widened ratio.
+      """WITH c AS (SELECT c_mktsegment AS seg,
+        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
+        |  FROM customer),
+        |d AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY seg) AS BIGINT)
+        |      AS n,
+        |    CAST(SUM(cents) OVER (PARTITION BY seg) AS BIGINT) AS t
+        |  FROM c)
+        |SELECT seg, MAX(n) AS n, MAX(t) AS total,
+        |  CAST(SUM(ABS(n * cents - t)) AS BIGINT) AS sad_n,
+        |  CAST(CAST(SUM(ABS(n * cents - t)) AS HUGEINT) * 1000000
+        |    // (CAST(2 AS HUGEINT) * MAX(n) * MAX(t)) AS BIGINT)
+        |    AS hoover_ppm
+        |FROM d GROUP BY seg ORDER BY seg""".stripMargin),
 
     // Mayan Long Count roundtrip — days since epoch into the mixed-radix
     // baktun.katun.tun.uinal.kin (20·20·18·20 — uinal is the 18 branch)
     // and back; the mixed-radix place-value shape calendars actually use.
-    "fn_mayan_long_count" -> ((s, d) => {
+    Op("fn_mayan_long_count", (s, d) => {
       Tables.orders(s, d)
         .where(col("o_orderkey") % 53 === 29)
         .select(col("o_orderkey").as("okey"))
@@ -1252,11 +2119,25 @@ object Round12dOps extends Family {
         .withColumn("roundtrip", expr("days_back = days"))
         .select("okey", "days", "lc", "days_back", "roundtrip")
         .orderBy("okey")
-    }),
+    },
+      // Same mixed radix.
+      """WITH b AS (SELECT o_orderkey AS okey,
+        |    o_orderkey * 97 % 1872000 AS days
+        |  FROM orders WHERE o_orderkey % 53 = 29),
+        |p AS (SELECT *, days % 20 AS kin, days // 20 % 18 AS uinal,
+        |    days // 360 % 20 AS tun, days // 7200 % 20 AS katun,
+        |    days // 144000 AS baktun FROM b)
+        |SELECT okey, days,
+        |  CONCAT(baktun, '.', katun, '.', tun, '.', uinal, '.', kin) AS lc,
+        |  baktun * 144000 + katun * 7200 + tun * 360 + uinal * 20 + kin
+        |    AS days_back,
+        |  baktun * 144000 + katun * 7200 + tun * 360 + uinal * 20 + kin
+        |    = days AS roundtrip
+        |FROM p ORDER BY okey""".stripMargin),
 
     // Four-firm concentration ratio — top-4 balance share per segment by
     // rank-exact selection; the antitrust screen next to Herfindahl.
-    "agg_cr4" -> ((s, d) => {
+    Op("agg_cr4", (s, d) => {
       val rich = Window.partitionBy("seg")
         .orderBy(col("cents").desc, col("c_custkey"))
       Tables.customer(s, d)
@@ -1271,13 +2152,26 @@ object Round12dOps extends Family {
         .withColumn("cr4_ppm", expr("top4 * 1000000 DIV total"))
         .select("seg", "n", "total", "top4", "cr4_ppm")
         .orderBy("seg")
-    }),
+    },
+      // Same rank-exact top-4 share.
+      """WITH c AS (SELECT c_custkey, c_mktsegment AS seg,
+        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
+        |  FROM customer),
+        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY seg
+        |    ORDER BY cents DESC, c_custkey) AS BIGINT) AS rk FROM c)
+        |SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(cents) AS BIGINT) AS total,
+        |  CAST(SUM(CASE WHEN rk <= 4 THEN cents ELSE 0 END) AS BIGINT)
+        |    AS top4,
+        |  CAST(SUM(CASE WHEN rk <= 4 THEN cents ELSE 0 END) AS BIGINT)
+        |    * 1000000 // CAST(SUM(cents) AS BIGINT) AS cr4_ppm
+        |FROM r GROUP BY seg ORDER BY seg""".stripMargin),
 
     // Gauss circle counts — lattice points inside radius r via the
     // column sweep Σ(2·isqrt(r²−x²)+1) with the native IntSqrt: the
     // exact N(r) whose πr² error the spec bounds. Constant explode per
     // radius, embarrassingly parallel.
-    "fn_gauss_circle" -> ((s, d) => {
+    Op("fn_gauss_circle", (s, d) => {
       Tables.region(s, d)
         .select(col("r_regionkey").cast("bigint").as("rk"))
         .withColumn("r", expr("20 + rk * 15"))
@@ -1287,12 +2181,23 @@ object Round12dOps extends Family {
         .groupBy("rk", "r")
         .agg(sum("col_pts").as("n_inside"), count(lit(1)).as("n_cols"))
         .orderBy("rk")
-    }),
+    },
+      // Same column sweep, same corrected root.
+      s"""WITH b AS (SELECT CAST(r_regionkey AS BIGINT) AS rk,
+         |    20 + CAST(r_regionkey AS BIGINT) * 15 AS r FROM region),
+         |s AS (SELECT CAST(g AS BIGINT) AS x
+         |  FROM generate_series(-80, 80) AS gs(g)),
+         |cols AS (SELECT rk, r, x,
+         |    2 * ${Round12cOps.duckIsqrt("r * r - x * x")} + 1 AS col_pts
+         |  FROM b CROSS JOIN s WHERE ABS(x) <= r)
+         |SELECT rk, r, CAST(SUM(col_pts) AS BIGINT) AS n_inside,
+         |  CAST(COUNT(*) AS BIGINT) AS n_cols
+         |FROM cols GROUP BY rk, r ORDER BY rk""".stripMargin),
 
     // Awesome oscillator (5/13 declared spans) — truncating SMAs of the
     // bar midpoint (h+l) DIV 2, fast minus slow, rn-gated; plus the
     // saucer signal (two rising AO bars). One sort, two frame sums.
-    "win_awesome_osc" -> ((s, d) => {
+    Op("win_awesome_osc", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w5 = ord.rowsBetween(-4, 0)
       val w13 = ord.rowsBetween(-12, 0)
@@ -1316,12 +2221,32 @@ object Round12dOps extends Family {
         .select("event_type", "day", "mid", "sma5", "sma13", "ao",
           "saucer")
         .orderBy("event_type", "day")
-    }),
+    },
+      // Same midpoint SMAs, same filtered-then-lagged saucer.
+      """WITH e AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, day, MAX(cents) AS h, MIN(cents) AS l
+        |  FROM e GROUP BY 1, 2),
+        |m AS (SELECT *, (h + l) // 2 AS mid,
+        |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
+        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+        |sm AS (SELECT *,
+        |    CAST(SUM(mid) OVER (o ROWS 4 PRECEDING) AS BIGINT) // 5
+        |      AS sma5,
+        |    CAST(SUM(mid) OVER (o ROWS 12 PRECEDING) AS BIGINT) // 13
+        |      AS sma13
+        |  FROM m WINDOW o AS (PARTITION BY event_type ORDER BY day)),
+        |f AS (SELECT *, sma5 - sma13 AS ao FROM sm WHERE rn >= 13),
+        |g AS (SELECT *, lag(ao, 1) OVER o AS prev_ao
+        |  FROM f WINDOW o AS (PARTITION BY event_type ORDER BY day))
+        |SELECT event_type, day, mid, sma5, sma13, ao,
+        |  prev_ao IS NOT NULL AND ao > prev_ao AS saucer
+        |FROM g ORDER BY event_type, day""".stripMargin),
 
     // Text histogram — per-segment counts rendered as exact #-bars
     // (REPEAT, width = cnt·20 DIV max); the reporting-formatter shape
     // both engines share bit-identically.
-    "fn_text_histogram" -> ((s, d) => {
+    Op("fn_text_histogram", (s, d) => {
       val all = Window.partitionBy(lit(1))
       Tables.customer(s, d)
         .groupBy(col("c_mktsegment").as("seg"))
@@ -1331,12 +2256,19 @@ object Round12dOps extends Family {
         .withColumn("bar", expr("REPEAT('#', CAST(width AS INT))"))
         .select("seg", "cnt", "width", "bar")
         .orderBy("seg")
-    }),
+    },
+      // Same exact bar widths.
+      """WITH c AS (SELECT c_mktsegment AS seg,
+        |    CAST(COUNT(*) AS BIGINT) AS cnt FROM customer GROUP BY 1),
+        |m AS (SELECT *, CAST(MAX(cnt) OVER () AS BIGINT) AS mx FROM c)
+        |SELECT seg, cnt, cnt * 20 // mx AS width,
+        |  REPEAT('#', CAST(cnt * 20 // mx AS INT)) AS bar
+        |FROM m ORDER BY seg""".stripMargin),
 
     // MASE-style naive comparison — Σ|c−lag1| over Σ|c−lag7| exact
     // milli per series: is the 1-step naive better than the weekly
     // seasonal naive? The scale-free forecast-accuracy denominator law.
-    "agg_mase_naive" -> ((s, d) => {
+    Op("agg_mase_naive", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
@@ -1354,13 +2286,31 @@ object Round12dOps extends Family {
           "CASE WHEN sae7 = 0 THEN 0L ELSE sae1 * 1000 DIV sae7 END"))
         .select("event_type", "n", "sae1", "sae7", "mase_milli")
         .orderBy("event_type")
-    }),
+    },
+      // Same paired naive errors.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, day,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+        |  FROM e GROUP BY 1, 2),
+        |er AS (SELECT event_type, ABS(c - lag(c, 1) OVER o) AS e1,
+        |    ABS(c - lag(c, 7) OVER o) AS e7
+        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day))
+        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(e1) AS BIGINT) AS sae1,
+        |  CAST(SUM(e7) AS BIGINT) AS sae7,
+        |  CASE WHEN CAST(SUM(e7) AS BIGINT) = 0 THEN 0
+        |    ELSE CAST(SUM(e1) AS BIGINT) * 1000
+        |      // CAST(SUM(e7) AS BIGINT) END AS mase_milli
+        |FROM er WHERE e1 IS NOT NULL AND e7 IS NOT NULL
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // Leap-day census — f(y) = y/4 − y/100 + y/400 differenced across a
     // year span, cross-validated against the ENGINE's own datediff
     // (total days = 365·Δy + leaps must match exactly); a calendar law
     // two engines can only agree on if both cores are right.
-    "fn_leap_count" -> ((s, d) => {
+    Op("fn_leap_count", (s, d) => {
       def f(y: String) = s"($y DIV 4 - $y DIV 100 + $y DIV 400)"
       Tables.part(s, d)
         .where(col("p_partkey") % 59 === 17)
@@ -1380,13 +2330,29 @@ object Round12dOps extends Family {
         .select("pk", "y1", "y2", "leaps", "span_days", "engine_days",
           "agree")
         .orderBy("pk")
-    }),
+    },
+      // Same Gregorian counting, same engine cross-check.
+      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
+        |    1900 + CAST(p_partkey AS BIGINT) % 80 AS y1,
+        |    1900 + CAST(p_partkey AS BIGINT) % 80
+        |      + CAST(p_partkey AS BIGINT) % 40 + 1 AS y2
+        |  FROM part WHERE p_partkey % 59 = 17),
+        |l AS (SELECT *, ((y2 - 1) // 4 - (y2 - 1) // 100 + (y2 - 1) // 400)
+        |    - ((y1 - 1) // 4 - (y1 - 1) // 100 + (y1 - 1) // 400) AS leaps
+        |  FROM b)
+        |SELECT pk, y1, y2, leaps, 365 * (y2 - y1) + leaps AS span_days,
+        |  CAST(date_diff('day', make_date(CAST(y1 AS INT), 1, 1),
+        |    make_date(CAST(y2 AS INT), 1, 1)) AS BIGINT) AS engine_days,
+        |  365 * (y2 - y1) + leaps = date_diff('day',
+        |    make_date(CAST(y1 AS INT), 1, 1),
+        |    make_date(CAST(y2 AS INT), 1, 1)) AS agree
+        |FROM l ORDER BY pk""".stripMargin),
 
     // X̄-R control chart — weekly subgroups per series: grand mean and
     // mean range in exact milli, control limits via the literal A2
     // constant (577 milli at n≈5, the declared constant); out-of-control
     // subgroup census. The SPC shape, float-free.
-    "agg_xbar_r_chart" -> ((s, d) => {
+    Op("agg_xbar_r_chart", (s, d) => {
       val byT = Window.partitionBy("event_type")
       Tables.events(s, d)
         .select(col("event_type"), col("event_id"), col("ts_us"),
@@ -1416,14 +2382,35 @@ object Round12dOps extends Family {
         .select("event_type", "week", "sz", "xbar_milli", "grand_milli",
           "rbar_milli", "ucl_milli", "lcl_milli", "out_of_control")
         .orderBy("event_type", "week")
-    })
+    },
+      // Same subgroup stats, same declared A2 literal.
+      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+        |    epoch_us(ts) // 86400000000 // 7 AS week,
+        |    epoch_us(ts) // 86400000000 AS day,
+        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+        |bar AS (SELECT event_type, week, day,
+        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+        |  FROM e GROUP BY 1, 2, 3),
+        |wk AS (SELECT event_type, week, CAST(COUNT(*) AS BIGINT) AS sz,
+        |    CAST(SUM(c) AS BIGINT) AS wsum,
+        |    MAX(c) - MIN(c) AS wrange
+        |  FROM bar GROUP BY 1, 2),
+        |g AS (SELECT *, wsum * 1000 // sz AS xbar_milli,
+        |    CAST(SUM(wsum) OVER (PARTITION BY event_type) AS BIGINT)
+        |      * 1000 // CAST(SUM(sz) OVER (PARTITION BY event_type)
+        |      AS BIGINT) AS grand_milli,
+        |    CAST(SUM(wrange) OVER (PARTITION BY event_type) AS BIGINT)
+        |      * 1000 // CAST(COUNT(*) OVER (PARTITION BY event_type)
+        |      AS BIGINT) AS rbar_milli
+        |  FROM wk),
+        |c AS (SELECT *, grand_milli + 577 * rbar_milli // 1000 AS ucl_milli,
+        |    grand_milli - 577 * rbar_milli // 1000 AS lcl_milli FROM g)
+        |SELECT event_type, week, sz, xbar_milli, grand_milli, rbar_milli,
+        |  ucl_milli, lcl_milli,
+        |  xbar_milli > ucl_milli OR xbar_milli < lcl_milli
+        |    AS out_of_control
+        |FROM c ORDER BY event_type, week""".stripMargin)
   )
-
-  /** Fibonacci numbers F(2)..F(22) descending (75025 down to 1, skipping
-    * the duplicate F(1)) for the Zeckendorf walk. */
-  private val ZeckFibs = Seq(75025L, 46368L, 28657L, 17711L, 10946L,
-    6765L, 4181L, 2584L, 1597L, 987L, 610L, 377L, 233L, 144L, 89L, 55L,
-    34L, 21L, 13L, 8L, 5L, 3L, 2L, 1L)
 
   /** Unrolled square-and-multiply `base^e mod m` as named step columns
     * (pfx-indexed), one generator for both dialects. */
@@ -1469,1081 +2456,4 @@ object Round12dOps extends Family {
         s"k$i" -> (s"CASE WHEN $dp = 0 THEN ${if (i == 1) "1L" else s"k${i - 1}"} " +
           s"ELSE a$i * $k1 + $k2 END"))
     }
-
-  val oracles: Map[String, String] = unique(
-    // Same 12-step ledger through the same generator.
-    "fn_amortization" -> {
-      val walked = amortSteps("//").foldLeft(
-        "(SELECT c_custkey AS ck, (c_custkey % 90000 + 10000) * 20 AS principal, " +
-          "c_custkey % 400 + 100 AS rate_bp, " +
-          "(c_custkey % 90000 + 10000) * 20 // 24 AS pay, " +
-          "(c_custkey % 90000 + 10000) * 20 AS bal0 " +
-          "FROM customer WHERE c_custkey % 5 = 2)") {
-        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
-      s"""SELECT ck, principal, rate_bp, pay, bal12,
-         |  ${(0 until 12).map(k => s"i$k").mkString(" + ")} AS total_interest,
-         |  principal - bal12 AS principal_paid
-         |FROM $walked ORDER BY ck""".stripMargin
-    },
-
-    // Same monthly inflows, same 3× investment, same crossing pick.
-    "agg_payback_period" ->
-      """WITH m AS (SELECT o_orderpriority AS pri,
-        |    CAST(STRFTIME(o_orderdate, '%Y%m') AS BIGINT) AS mon,
-        |    CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS inflow
-        |  FROM orders GROUP BY 1, 2),
-        |c AS (SELECT *, CAST(SUM(inflow) OVER (PARTITION BY pri
-        |      ORDER BY mon ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumin,
-        |    CAST(FIRST_VALUE(inflow) OVER (PARTITION BY pri ORDER BY mon
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS BIGINT) * 3 AS invest,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY pri ORDER BY mon)
-        |      AS BIGINT) AS midx,
-        |    CAST(COUNT(*) OVER (PARTITION BY pri) AS BIGINT) AS nmon
-        |  FROM m),
-        |x AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY pri ORDER BY mon)
-        |    AS pick FROM c WHERE cumin >= invest)
-        |SELECT pri, invest, midx,
-        |  (invest - (cumin - inflow)) * 1000 // inflow AS frac_milli, nmon
-        |FROM x WHERE pick = 1 ORDER BY pri""".stripMargin,
-
-    // Same rational algebra, same sign split.
-    "fn_kelly_criterion" ->
-      """WITH b AS (SELECT c_custkey AS ck,
-        |    c_custkey * 7919 % 500000 + 250000 AS p_ppm,
-        |    c_custkey * 104729 % 3000 + 500 AS b_milli
-        |  FROM customer WHERE c_custkey % 7 = 3),
-        |e AS (SELECT *, 1000000 - p_ppm AS q_ppm,
-        |    b_milli * p_ppm - 1000 * (1000000 - p_ppm) AS edge_num FROM b)
-        |SELECT ck, p_ppm, b_milli, edge_num,
-        |  CASE WHEN edge_num < 0 THEN -((-edge_num) // b_milli)
-        |    ELSE edge_num // b_milli END AS kelly_ppm,
-        |  GREATEST(CASE WHEN edge_num < 0 THEN -((-edge_num) // b_milli)
-        |    ELSE edge_num // b_milli END, 0) AS stake_ppm
-        |FROM e ORDER BY ck""".stripMargin,
-
-    // Same branches, same ppm identities.
-    "fn_odds_convert" ->
-      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-        |    CAST(p_partkey AS BIGINT) * 37 % 9000 + 1100 AS dec1,
-        |    CAST(p_partkey AS BIGINT) * 53 % 9000 + 1100 AS dec2
-        |  FROM part WHERE p_partkey % 13 = 1)
-        |SELECT pk, dec1, dec2, dec1 - 1000 AS frac_milli,
-        |  CASE WHEN dec1 >= 2000 THEN (dec1 - 1000) * 100
-        |    ELSE -(100000000 // (dec1 - 1000)) END AS american_milli,
-        |  1000000000 // dec1 AS implied1_ppm,
-        |  1000000000 // dec1 + 1000000000 // dec2 - 1000000
-        |    AS overround_ppm
-        |FROM b ORDER BY pk""".stripMargin,
-
-    // Same integer Bernstein form, same constant 11-point series.
-    "fn_bezier_points" ->
-      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-        |    CAST(p_partkey AS BIGINT) * 11 % 200 AS y0,
-        |    CAST(p_partkey AS BIGINT) * 23 % 200 AS y1,
-        |    CAST(p_partkey AS BIGINT) * 41 % 200 AS y2
-        |  FROM part WHERE p_partkey % 31 = 6),
-        |s AS (SELECT CAST(g AS BIGINT) AS k
-        |  FROM generate_series(0, 10) AS gs(g))
-        |SELECT pk, y0, y1, y2, k,
-        |  2 * (10 - k) * k * 50 + k * k * 100 AS bx100,
-        |  (10 - k) * (10 - k) * y0 + 2 * (10 - k) * k * y1 + k * k * y2
-        |    AS by100
-        |FROM b CROSS JOIN s ORDER BY pk, k""".stripMargin,
-
-    // Same three chained stages, same 3·E1−3·E2+E3 blend.
-    "win_tema" -> {
-      val w = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
-      def stage(src: String, dst: String) = {
-        val num = w.zipWithIndex.map { case (wt, i) =>
-          if (i == 0) s"$wt * $src"
-          else s"COALESCE($wt * lag($src, $i) OVER o, 0)" }.mkString(" + ")
-        val den = w.zipWithIndex.map { case (wt, i) =>
-          if (i == 0) s"$wt"
-          else s"CASE WHEN lag($src, $i) OVER o IS NULL THEN 0 ELSE $wt END" }
-          .mkString(" + ")
-        s"SELECT *, ($num) // ($den) AS $dst"
-      }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
-         |s1 AS (${stage("c", "e1")} FROM bar
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |s2 AS (${stage("e1", "e2")} FROM s1
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |s3 AS (${stage("e2", "e3")} FROM s2
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day))
-         |SELECT event_type, day, c, e1, e2, e3,
-         |  3 * e1 - 3 * e2 + e3 AS tema
-         |FROM s3 ORDER BY event_type, day""".stripMargin
-    },
-
-    // Same n-scaled deviations, same corrected-root fences.
-    "agg_chebyshev_coverage" ->
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
-         |st AS (SELECT event_type AS et, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(c) AS BIGINT) AS sm,
-         |    CAST(SUM(c * c) AS BIGINT) AS ssq
-         |  FROM bar GROUP BY event_type),
-         |sq AS (SELECT *, ${Round12cOps.duckIsqrt("n * ssq - sm * sm")}
-         |    AS sd_n FROM st),
-         |j AS (SELECT bar.event_type, sq.n, sq.sd_n,
-         |    ABS(sq.n * bar.c - sq.sm) AS absdev_n
-         |  FROM bar JOIN sq ON bar.event_type = sq.et)
-         |SELECT event_type, MAX(n) AS n, MAX(sd_n) AS sd_n,
-         |  CAST(SUM(CASE WHEN absdev_n <= 2 * sd_n THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS within2,
-         |  CAST(SUM(CASE WHEN absdev_n <= 3 * sd_n THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS within3,
-         |  CAST(SUM(CASE WHEN absdev_n <= 2 * sd_n THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000000 // MAX(n) AS cov2_ppm,
-         |  CAST(SUM(CASE WHEN absdev_n <= 3 * sd_n THEN 1 ELSE 0 END)
-         |    AS BIGINT) * 1000000 // MAX(n) AS cov3_ppm
-         |FROM j GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Same Euclid walk through the same generator, same descending pick.
-    "fn_continued_fraction" -> {
-      val walked = cfSteps("//").foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) * 7919 % 100000 + 1 AS p, " +
-          "CAST(p_partkey AS BIGINT) * 104729 % 100000 + 1 AS q, " +
-          "CAST(p_partkey AS BIGINT) * 7919 % 100000 + 1 AS n0, " +
-          "CAST(p_partkey AS BIGINT) * 104729 % 100000 + 1 AS d0 " +
-          "FROM part WHERE p_partkey % 37 = 12)") {
-        case (prev, (n, e)) =>
-          s"(SELECT *, ${e.replace("0L", "CAST(0 AS BIGINT)")
-            .replace("1L", "CAST(1 AS BIGINT)")} AS $n FROM $prev)" }
-      val pickH = (6 to 1 by -1).map(i =>
-        s"WHEN k$i <= 50 THEN h$i").mkString("CASE ", " ", " ELSE 0 END")
-      val pickK = (6 to 1 by -1).map(i =>
-        s"WHEN k$i <= 50 THEN k$i").mkString("CASE ", " ", " ELSE 1 END")
-      s"""SELECT pk, p, q, $pickH AS best_h, $pickK AS best_k,
-         |  ABS(p * ($pickK) - ($pickH) * q) AS err_num
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same two bag differences, same rollup.
-    "set_symmetric_diff" ->
-      """WITH a AS (SELECT l.l_partkey AS pk
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |  WHERE o.o_orderkey % 11 = 0 AND c.c_mktsegment = 'BUILDING'),
-        |b AS (SELECT l.l_partkey AS pk
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |  WHERE o.o_orderkey % 11 = 0 AND c.c_mktsegment = 'MACHINERY'),
-        |sd AS ((SELECT pk FROM a EXCEPT ALL SELECT pk FROM b)
-        |  UNION ALL
-        |  (SELECT pk FROM b EXCEPT ALL SELECT pk FROM a))
-        |SELECT pk, CAST(COUNT(*) AS BIGINT) AS surplus
-        |FROM sd GROUP BY pk ORDER BY pk""".stripMargin,
-
-    // The relational min/max/argmax the typed fold must equal.
-    "ds_typed_mapgroups" ->
-      """WITH c AS (SELECT c_mktsegment AS seg, c_custkey,
-        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
-        |  FROM customer)
-        |SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
-        |  MIN(cents) AS min_cents, MAX(cents) AS max_cents,
-        |  CAST(MAX_BY(c_custkey, CAST(cents AS HUGEINT) * 10000000
-        |    + c_custkey) AS BIGINT) AS richest_ck
-        |FROM c GROUP BY seg ORDER BY seg""".stripMargin,
-
-    // The UNION ALL replay of the unpivot.
-    "api_melt" ->
-      """WITH w AS (SELECT CAST(c_nationkey AS BIGINT) AS nk,
-        |    CAST(COUNT(*) AS BIGINT) AS n_customers,
-        |    CAST(SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-        |      AS sum_cents,
-        |    MAX(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS max_cents
-        |  FROM customer GROUP BY 1)
-        |SELECT nk, 'n_customers' AS metric, n_customers AS value FROM w
-        |UNION ALL
-        |SELECT nk, 'sum_cents', sum_cents FROM w
-        |UNION ALL
-        |SELECT nk, 'max_cents', max_cents FROM w
-        |ORDER BY nk, metric""".stripMargin,
-
-    // Same anchors, same month table, engine dow already 0=Sunday here.
-    "fn_doomsday_dow" ->
-      """WITH b AS (SELECT o_orderkey AS okey,
-        |    CAST(o_orderdate AS DATE) AS dt
-        |  FROM orders WHERE o_orderkey % 17 = 6),
-        |f AS (SELECT *, EXTRACT(year FROM dt) AS y,
-        |    EXTRACT(month FROM dt) AS m, EXTRACT(day FROM dt) AS dd
-        |  FROM b),
-        |l AS (SELECT *, (y % 4 = 0 AND y % 100 <> 0) OR y % 400 = 0
-        |    AS leap,
-        |    (3 + (y - 1900) + (y - 1900) // 4) % 7 AS anchor FROM f),
-        |dm AS (SELECT *, CASE m WHEN 1 THEN CASE WHEN leap THEN 4 ELSE 3 END
-        |    WHEN 2 THEN CASE WHEN leap THEN 29 ELSE 28 END
-        |    WHEN 3 THEN 7 WHEN 4 THEN 4 WHEN 5 THEN 9 WHEN 6 THEN 6
-        |    WHEN 7 THEN 11 WHEN 8 THEN 8 WHEN 9 THEN 5 WHEN 10 THEN 10
-        |    WHEN 11 THEN 7 ELSE 12 END AS doomdate FROM l)
-        |SELECT okey, CAST(dt AS STRING) AS dt, CAST(y AS BIGINT) AS y,
-        |  CAST(m AS BIGINT) AS m, CAST(dd AS BIGINT) AS dd,
-        |  CAST((anchor + ((dd - doomdate) % 7 + 7) % 7) % 7 AS BIGINT)
-        |    AS dow0,
-        |  CAST(dayofweek(dt) AS BIGINT) AS engine_dow0,
-        |  (anchor + ((dd - doomdate) % 7 + 7) % 7) % 7
-        |    = dayofweek(dt) AS agree
-        |FROM dm ORDER BY okey""".stripMargin,
-
-    // Same color list, same power ladder, same roundtrip.
-    "fn_resistor_code" -> {
-      val colors = "['black','brown','red','orange','yellow'," +
-        "'green','blue','violet','grey','white']"
-      s"""WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-         |    CAST(p_partkey AS BIGINT) % 90 + 10 AS sig,
-         |    CAST(p_partkey AS BIGINT) % 5 AS expo
-         |  FROM part WHERE p_partkey % 43 = 17),
-         |e AS (SELECT *, $colors[CAST(sig // 10 AS INT) + 1] AS band1,
-         |    $colors[CAST(sig % 10 AS INT) + 1] AS band2,
-         |    $colors[CAST(expo AS INT) + 1] AS band3,
-         |    CASE expo WHEN 0 THEN 1 WHEN 1 THEN 10 WHEN 2 THEN 100
-         |      WHEN 3 THEN 1000 ELSE 10000 END AS mult
-         |  FROM b),
-         |r AS (SELECT *, (list_position($colors, band1) - 1) * 10
-         |    + (list_position($colors, band2) - 1) AS sig_back
-         |  FROM e)
-         |SELECT pk, sig, expo, band1, band2, band3,
-         |  sig * mult AS ohms,
-         |  CAST(sig_back * (CASE list_position($colors, band3) - 1
-         |    WHEN 0 THEN 1 WHEN 1 THEN 10 WHEN 2 THEN 100
-         |    WHEN 3 THEN 1000 ELSE 10000 END) AS BIGINT) AS ohms_back
-         |FROM r ORDER BY pk""".stripMargin
-    },
-
-    // Same lookup literal, same 12 probes.
-    "fn_seven_segment" -> {
-      val probes = (1 to 12).map(i =>
-        s"CAST(SUBSTRING('6255456376', CAST(SUBSTRING(code12, $i, 1) " +
-          s"AS INT) + 1, 1) AS BIGINT)")
-      s"""WITH b AS (SELECT o_orderkey AS okey,
-         |    LPAD(CAST(o_orderkey * 67 + 1 AS STRING), 12, '0') AS code12
-         |  FROM orders WHERE o_orderkey % 41 = 19)
-         |SELECT okey, code12,
-         |  ${probes.mkString(" + ")} AS total_segments,
-         |  GREATEST(${probes.mkString(", ")}) AS max_digit_segments
-         |FROM b ORDER BY okey""".stripMargin
-    },
-
-    // Same fixed-point recurrence, nested one SELECT per step.
-    "fn_logistic_map" -> {
-      val walked = (0 until 10).foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 1500 + 2500 AS r_milli, " +
-          "(CAST(p_partkey AS BIGINT) * 7 % 900 + 50) * 1000 AS x0 " +
-          "FROM part WHERE p_partkey % 47 = 21)") { (prev, k) =>
-        s"(SELECT *, r_milli * x$k * (1000000 - x$k) // 1000000000 " +
-          s"AS x${k + 1} FROM $prev)" }
-      s"""SELECT pk, r_milli, x0, x1, x2, x3, x10
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same ROC pair, same linear weights, same sign splits.
-    "win_coppock" -> {
-      def roc(k: Int, dst: String) =
-        s"""CASE WHEN lag(c, $k) OVER o IS NULL THEN NULL
-           |  WHEN c - lag(c, $k) OVER o < 0
-           |    THEN -((lag(c, $k) OVER o - c) * 1000000 // lag(c, $k) OVER o)
-           |  ELSE (c - lag(c, $k) OVER o) * 1000000 // lag(c, $k) OVER o
-           |END AS $dst""".stripMargin
-      val wsum = (0 until 10).map(i =>
-        s"COALESCE(lag(mom, $i) OVER o * ${10 - i}, 0)").mkString(" + ")
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
-         |r AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
-         |    ${roc(14, "roc14")}, ${roc(11, "roc11")}
-         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |m AS (SELECT *, roc14 + roc11 AS mom FROM r),
-         |w AS (SELECT *, $wsum AS wnum
-         |  FROM m WINDOW o AS (PARTITION BY event_type ORDER BY day))
-         |SELECT event_type, day, c, mom,
-         |  CASE WHEN wnum < 0 THEN -((-wnum) // 55) ELSE wnum // 55 END
-         |    AS coppock_ppm
-         |FROM w WHERE rn >= 24 ORDER BY event_type, day""".stripMargin
-    },
-
-    // Same chunked Horner walks, same validation landing on 1.
-    "fn_iban_check" -> {
-      def chunks(src: String, widths: Seq[Int], pfx: String) = {
-        var off = 1
-        widths.zipWithIndex.map { case (w, i) =>
-          val c = s"CAST(SUBSTRING($src, $off, $w) AS BIGINT)"
-          val prev = if (i == 0) "0" else s"$pfx${i - 1}"
-          off += w
-          s"$pfx$i" -> s"($prev * ${math.pow(10, w).toLong} + $c) % 97"
-        }
-      }
-      val gen = chunks("gen24", Seq(6, 6, 6, 6), "g")
-      val vld = chunks("val24", Seq(6, 6, 6, 6), "v")
-      val genWalked = gen.foldLeft(
-        "(SELECT o_orderkey AS okey, " +
-          "LPAD(CAST(o_orderkey * 73 + 11 AS STRING), 18, '0') AS bban, " +
-          "CONCAT(LPAD(CAST(o_orderkey * 73 + 11 AS STRING), 18, '0'), " +
-          "'131400') AS gen24 " +
-          "FROM orders WHERE o_orderkey % 43 = 21)") {
-        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
-      val withChk =
-        s"""(SELECT *, 98 - ${gen.last._1} AS chk,
-           |  CONCAT('DE', LPAD(CAST(98 - ${gen.last._1} AS STRING), 2, '0'),
-           |    bban) AS iban,
-           |  CONCAT(bban, '1314',
-           |    LPAD(CAST(98 - ${gen.last._1} AS STRING), 2, '0')) AS val24
-           |FROM $genWalked)""".stripMargin
-      val valWalked = vld.foldLeft(withChk) {
-        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
-      s"""SELECT okey, bban, chk, iban, ${vld.last._1} = 1 AS valid
-         |FROM $valWalked ORDER BY okey""".stripMargin
-    },
-
-    // Same n-scaled range, same corrected-root denominator.
-    "agg_hurst_rs" ->
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
-         |dv AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
-         |      AS BIGINT) AS n,
-         |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm
-         |  FROM bar),
-         |cd AS (SELECT *, CAST(SUM(n * c - sm) OVER (PARTITION BY
-         |      event_type ORDER BY day ROWS UNBOUNDED PRECEDING)
-         |      AS BIGINT) AS cumdev FROM dv),
-         |agg AS (SELECT event_type, MAX(n) AS n,
-         |    MAX(cumdev) - MIN(cumdev) AS r_n, MAX(sm) AS sm,
-         |    CAST(SUM(c * c) AS BIGINT) AS ssq
-         |  FROM cd GROUP BY event_type),
-         |sq AS (SELECT *, ${Round12cOps.duckIsqrt("n * ssq - sm * sm")}
-         |    AS sd_n FROM agg)
-         |SELECT event_type, n, r_n, sd_n,
-         |  CASE WHEN sd_n = 0 THEN 0 ELSE r_n * 1000 // sd_n END
-         |    AS rs_milli
-         |FROM sq ORDER BY event_type""".stripMargin,
-
-    // Same rate list, same ceil-DIV ledger.
-    "mm_keyframe_plan" ->
-      """WITH b AS (SELECT doc_id,
-        |    [24, 25, 30, 50, 60][CAST(doc_id % 5 AS INT) + 1] AS fps,
-        |    doc_id * 37 % 60000 + 5000 AS dur_ms FROM documents),
-        |f AS (SELECT *, fps * dur_ms // 1000 AS total_frames,
-        |    fps * 2 AS gop FROM b),
-        |g AS (SELECT *, (total_frames + gop - 1) // gop AS n_keyframes,
-        |    GREATEST(total_frames // 16, 1) AS stride FROM f)
-        |SELECT doc_id, CAST(fps AS BIGINT) AS fps, dur_ms, total_frames,
-        |  n_keyframes, CAST(stride AS BIGINT) AS stride,
-        |  (total_frames + stride - 1) // stride AS n_sampled
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Same clamped rank quartiles, same ppm spread.
-    "agg_quartile_dispersion" ->
-      """WITH c AS (SELECT c_custkey, c_mktsegment AS seg,
-        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
-        |  FROM customer),
-        |r AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY seg) AS BIGINT)
-        |      AS n,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY seg
-        |      ORDER BY cents, c_custkey) AS BIGINT) AS rk
-        |  FROM c),
-        |q AS (SELECT *, MAX(CASE WHEN rk = GREATEST((n + 1) // 4, 1)
-        |      THEN cents END) OVER (PARTITION BY seg) AS q1,
-        |    MAX(CASE WHEN rk = LEAST(3 * (n + 1) // 4, n)
-        |      THEN cents END) OVER (PARTITION BY seg) AS q3
-        |  FROM r)
-        |SELECT seg, MAX(n) AS n, MAX(q1) AS q1, MAX(q3) AS q3,
-        |  MAX(q3) - MAX(q1) AS iqr,
-        |  (MAX(q3) - MAX(q1)) * 1000000 // (MAX(q3) + MAX(q1)) AS qcd_ppm
-        |FROM q GROUP BY seg ORDER BY seg""".stripMargin,
-
-    // Same 14-bar gain/loss split, same sign-split ratio.
-    "win_cmo" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
-        |r AS (SELECT *, c - lag(c, 1) OVER o AS r,
-        |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
-        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-        |ud AS (SELECT *,
-        |    CAST(SUM(CASE WHEN r > 0 THEN r ELSE 0 END)
-        |      OVER (o ROWS 13 PRECEDING) AS BIGINT) AS up,
-        |    CAST(SUM(CASE WHEN r < 0 THEN -r ELSE 0 END)
-        |      OVER (o ROWS 13 PRECEDING) AS BIGINT) AS dn
-        |  FROM r WINDOW o AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type, day, up, dn,
-        |  CASE WHEN up + dn = 0 THEN 0
-        |    WHEN up < dn THEN -((dn - up) * 1000000 // (up + dn))
-        |    ELSE (up - dn) * 1000000 // (up + dn) END AS cmo_ppm
-        |FROM ud WHERE rn >= 15 ORDER BY event_type, day""".stripMargin,
-
-    // Same run counts under both orderings.
-    "warehouse_rle_estimate" ->
-      """WITH o AS (SELECT o_orderkey, o_orderstatus AS st FROM orders
-        |  WHERE o_orderkey % 3 = 0),
-        |b AS (SELECT *,
-        |    CASE WHEN lag(st, 1) OVER (ORDER BY o_orderkey) IS NULL
-        |      OR lag(st, 1) OVER (ORDER BY o_orderkey) <> st
-        |      THEN 1 ELSE 0 END AS brk_key,
-        |    CASE WHEN lag(st, 1) OVER (ORDER BY st, o_orderkey) IS NULL
-        |      OR lag(st, 1) OVER (ORDER BY st, o_orderkey) <> st
-        |      THEN 1 ELSE 0 END AS brk_sorted
-        |  FROM o)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(brk_key) AS BIGINT) AS runs_by_key,
-        |  CAST(SUM(brk_sorted) AS BIGINT) AS runs_sorted,
-        |  CAST(SUM(brk_key) AS BIGINT) * 1000000 // COUNT(*)
-        |    AS ratio_key_ppm,
-        |  CAST(SUM(brk_sorted) AS BIGINT) * 1000000 // COUNT(*)
-        |    AS ratio_sorted_ppm
-        |FROM b""".stripMargin,
-
-    // Same block deltas, same bit ladder.
-    "warehouse_delta_estimate" -> {
-      val ladder = (13 to 0 by -1).map(k =>
-        s"WHEN max_delta >= ${1L << k} THEN ${k + 1}")
-        .mkString("CASE ", " ", " ELSE 1 END")
-      s"""WITH o AS (SELECT o_orderkey, o_orderkey // 10000 AS blk
-         |  FROM orders),
-         |dl AS (SELECT *, o_orderkey - lag(o_orderkey, 1)
-         |    OVER (PARTITION BY blk ORDER BY o_orderkey) AS delta
-         |  FROM o),
-         |a AS (SELECT blk, CAST(COUNT(*) AS BIGINT) AS n,
-         |    MAX(delta) AS max_delta
-         |  FROM dl GROUP BY blk),
-         |f AS (SELECT *, CAST($ladder AS BIGINT) AS bits
-         |  FROM a WHERE n > 1)
-         |SELECT blk, n, max_delta, bits,
-         |  (64 - bits) * 1000000 // 64 AS saving_ppm
-         |FROM f ORDER BY blk""".stripMargin
-    },
-
-    // Same Bézout recombination.
-    "fn_crt_roundtrip" ->
-      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-        |    CAST(p_partkey AS BIGINT) % 1001 AS v
-        |  FROM part WHERE p_partkey % 7 = 4)
-        |SELECT pk, v, v % 7 AS r7, v % 11 AS r11, v % 13 AS r13,
-        |  ((v % 7) * 715 + (v % 11) * 364 + (v % 13) * 924) % 1001
-        |    AS v_back,
-        |  ((v % 7) * 715 + (v % 11) * 364 + (v % 13) * 924) % 1001 = v
-        |    AS roundtrip
-        |FROM b ORDER BY pk""".stripMargin,
-
-    // Same cross products, same orientation test.
-    "fn_barycentric_coords" ->
-      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-        |    CAST(p_partkey AS BIGINT) * 17 % 200 AS px,
-        |    CAST(p_partkey AS BIGINT) * 31 % 200 AS py
-        |  FROM part WHERE p_partkey % 11 = 9),
-        |l AS (SELECT *,
-        |    (180 - px) * (180 - py) - (90 - px) * (40 - py) AS la,
-        |    (90 - px) * (20 - py) - (20 - px) * (180 - py) AS lb,
-        |    (20 - px) * (40 - py) - (180 - px) * (20 - py) AS lc
-        |  FROM b)
-        |SELECT pk, px, py, la, lb, lc, CAST(24200 AS BIGINT) AS denom,
-        |  la >= 0 AND lb >= 0 AND lc >= 0 AS inside
-        |FROM l ORDER BY pk""".stripMargin,
-
-    // Same integer Heron product, same corrected-root floor.
-    "fn_heron_area" ->
-      s"""WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-         |    CAST(p_partkey AS BIGINT) % 50 + 50 AS a,
-         |    CAST(p_partkey AS BIGINT) * 3 % 50 + 50 AS b,
-         |    CAST(p_partkey AS BIGINT) * 7 % 50 + 50 AS c
-         |  FROM part WHERE p_partkey % 13 = 8),
-         |h AS (SELECT *,
-         |    (a + b + c) * (b + c - a) * (a - b + c) * (a + b - c)
-         |      AS area16 FROM b)
-         |SELECT pk, a, b, c, area16,
-         |  ${Round12cOps.duckIsqrt("area16")} // 4 AS area_floor
-         |FROM h ORDER BY pk""".stripMargin,
-
-    // Same truncating SMA, same 11-bar shift.
-    "win_dpo" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
-        |w AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
-        |    CAST(SUM(c) OVER (o ROWS 10 PRECEDING) AS BIGINT) // 11
-        |      AS sma11
-        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-        |s AS (SELECT *, lag(sma11, 6) OVER o AS sma_shift
-        |  FROM w WINDOW o AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type, day, c, sma_shift, c - sma_shift AS dpo
-        |FROM s WHERE rn >= 17 ORDER BY event_type, day""".stripMargin,
-
-    // Same step chain through the same generator.
-    "fn_modinv_fermat" -> {
-      val steps = modPowSteps("v", 1000001, 1000003L, "w")
-      val walked = steps.foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 1000002 + 1 AS v " +
-          "FROM part WHERE p_partkey % 53 = 23)") {
-        case (prev, (n, e)) => s"(SELECT *, $e AS $n FROM $prev)" }
-      s"""SELECT pk, v, ${steps.last._1} AS inv,
-         |  v * ${steps.last._1} % 1000003 AS check_one
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same greedy walk over the same literal Fibonacci list.
-    "fn_zeckendorf" -> {
-      val walked = ZeckFibs.zipWithIndex.foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 75025 AS v, " +
-          "CAST(p_partkey AS BIGINT) % 75025 AS rem0, " +
-          "CAST(0 AS BIGINT) AS mask0, CAST(0 AS BIGINT) AS nterms0 " +
-          "FROM part WHERE p_partkey % 17 = 2)") {
-        case (prev, (f, i)) =>
-          s"""(SELECT *, CASE WHEN rem$i >= $f THEN 1 ELSE 0 END
-             |    AS take${i + 1},
-             |  rem$i - (CASE WHEN rem$i >= $f THEN 1 ELSE 0 END) * $f
-             |    AS rem${i + 1},
-             |  mask$i * 2 + (CASE WHEN rem$i >= $f THEN 1 ELSE 0 END)
-             |    AS mask${i + 1},
-             |  nterms$i + (CASE WHEN rem$i >= $f THEN 1 ELSE 0 END)
-             |    AS nterms${i + 1}
-             |FROM $prev)""".stripMargin }
-      val n = ZeckFibs.length
-      s"""SELECT pk, v, CAST(mask$n AS BIGINT) AS mask,
-         |  CAST(nterms$n AS BIGINT) AS nterms, rem$n = 0 AS no_adjacent
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same 24 unrolled orbit steps.
-    "fn_collatz_steps" -> {
-      val walked = (0 until 24).foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 26 + 1 AS x0 " +
-          "FROM part WHERE p_partkey % 19 = 3)") { (prev, k) =>
-        s"(SELECT *, CASE WHEN x$k = 1 THEN 1 WHEN x$k % 2 = 0 " +
-          s"THEN x$k // 2 ELSE 3 * x$k + 1 END AS x${k + 1} FROM $prev)" }
-      s"""SELECT pk, x0,
-         |  CAST(${(0 until 24).map(k =>
-        s"(CASE WHEN x$k > 1 THEN 1 ELSE 0 END)").mkString(" + ")}
-         |    AS BIGINT) AS steps,
-         |  CAST(GREATEST(${(0 to 24).map(k => s"x$k").mkString(", ")})
-         |    AS BIGINT) AS peak,
-         |  x24 = 1 AS reached_one
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same even-division digit chain, same alternating powers.
-    "fn_negabinary" -> {
-      val walked = (0 until 18).foldLeft(
-        "(SELECT pk, v, v AS t0 FROM (SELECT " +
-          "CAST(p_partkey AS BIGINT) AS pk, " +
-          "(CAST(p_partkey AS BIGINT) * 13 % 30000) * " +
-          "(CASE WHEN p_partkey % 2 = 0 THEN 1 ELSE -1 END) AS v " +
-          "FROM part WHERE p_partkey % 23 = 7))") { (prev, k) =>
-        s"(SELECT *, ((t$k % 2) + 2) % 2 AS d$k, " +
-          s"(t$k - ((t$k % 2) + 2) % 2) // -2 AS t${k + 1} FROM $prev)" }
-      val recon = (0 until 18).map { k =>
-        val p = if (k % 2 == 0) 1L << k else -(1L << k)
-        s"d$k * ($p)" }.mkString(" + ")
-      s"""SELECT pk, v, CAST($recon AS BIGINT) AS v_back,
-         |  CAST(${(0 until 18).map(k => s"d$k").mkString(" + ")} AS BIGINT)
-         |    AS digits_sum,
-         |  $recon = v AND t18 = 0 AS roundtrip
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same n-scaled L1 sum.
-    "agg_mean_abs_dev" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
-        |dv AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
-        |      AS BIGINT) AS n,
-        |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm
-        |  FROM bar)
-        |SELECT event_type, MAX(n) AS n,
-        |  CAST(SUM(ABS(n * c - sm)) AS BIGINT) AS sad_n,
-        |  CAST(SUM(ABS(n * c - sm)) AS BIGINT) * 1000
-        |    // (MAX(n) * MAX(n)) AS mad_milli
-        |FROM dv GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Same 12 squared-digit steps, same absorbing test.
-    "fn_happy_number" -> {
-      def sq(src: String) =
-        s"($src // 100) * ($src // 100) + " +
-          s"($src // 10 % 10) * ($src // 10 % 10) + ($src % 10) * ($src % 10)"
-      val walked = (0 until 12).foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 999 + 1 AS h0 " +
-          "FROM part WHERE p_partkey % 29 = 4)") { (prev, k) =>
-        s"(SELECT *, ${sq(s"h$k")} AS h${k + 1} FROM $prev)" }
-      s"""SELECT pk, h0, h12,
-         |  ${(0 to 12).map(k => s"h$k = 1").mkString(" OR ")} AS happy
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same closed-form 4-sort, same seven steps.
-    "fn_kaprekar_6174" -> {
-      def step(src: String, dst: String) =
-        s"""(SELECT *, ${dst}_s4 * 1000 + ${dst}_s3 * 100 + ${dst}_s2 * 10
-           |    + ${dst}_s1 - (${dst}_s1 * 1000 + ${dst}_s2 * 100
-           |    + ${dst}_s3 * 10 + ${dst}_s4) AS $dst FROM
-           |  (SELECT *, ${dst}_a + ${dst}_b + ${dst}_c + ${dst}_d
-           |      - ${dst}_s1 - ${dst}_s3 - ${dst}_s4 AS ${dst}_s2 FROM
-           |    (SELECT *,
-           |      GREATEST(${dst}_a, ${dst}_b, ${dst}_c, ${dst}_d) AS ${dst}_s4,
-           |      LEAST(${dst}_a, ${dst}_b, ${dst}_c, ${dst}_d) AS ${dst}_s1,
-           |      GREATEST(LEAST(${dst}_a, ${dst}_b), LEAST(${dst}_a, ${dst}_c),
-           |        LEAST(${dst}_a, ${dst}_d), LEAST(${dst}_b, ${dst}_c),
-           |        LEAST(${dst}_b, ${dst}_d), LEAST(${dst}_c, ${dst}_d))
-           |        AS ${dst}_s3 FROM
-           |      (SELECT *, $src // 1000 AS ${dst}_a,
-           |        $src // 100 % 10 AS ${dst}_b, $src // 10 % 10 AS ${dst}_c,
-           |        $src % 10 AS ${dst}_d FROM """.stripMargin
-      // innermost query computes k1, outermost k7
-      val open = (6 to 0 by -1).map(k => step(s"k$k", s"k${k + 1}")).mkString
-      val base = "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-        "CAST(p_partkey AS BIGINT) % 9000 + 1000 AS k0 " +
-        "FROM part WHERE p_partkey % 31 = 11 AND NOT (" +
-        "(p_partkey % 9000 + 1000) // 1000 = (p_partkey % 9000 + 1000) // 100 % 10 AND " +
-        "(p_partkey % 9000 + 1000) // 100 % 10 = (p_partkey % 9000 + 1000) // 10 % 10 AND " +
-        "(p_partkey % 9000 + 1000) // 10 % 10 = (p_partkey % 9000 + 1000) % 10))"
-      // each step opens four nested SELECTs, all closed after the base
-      val closes = Seq.fill(7)("))))").mkString
-      s"""SELECT pk, k0, k7,
-         |  ${(1 to 7).map(k => s"k$k = 6174").mkString(" OR ")}
-         |    AS reached_6174
-         |FROM $open$base$closes ORDER BY pk""".stripMargin
-    },
-
-    // Same closed form vs the same walked steps.
-    "fn_digital_root" -> {
-      def dsum(src: String) =
-        s"$src // 100000 + $src // 10000 % 10 + $src // 1000 % 10 + " +
-          s"$src // 100 % 10 + $src // 10 % 10 + $src % 10"
-      val walked = (0 until 4).foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) * 97 % 999999 + 1 AS v, " +
-          "CAST(p_partkey AS BIGINT) * 97 % 999999 + 1 AS g0 " +
-          "FROM part WHERE p_partkey % 37 = 5)") { (prev, k) =>
-        s"(SELECT *, ${dsum(s"g$k")} AS g${k + 1} FROM $prev)" }
-      s"""SELECT pk, v, 1 + (v - 1) % 9 AS root_closed, g4 AS root_walked,
-         |  CAST(${(0 until 4).map(k =>
-        s"(CASE WHEN g$k >= 10 THEN 1 ELSE 0 END)").mkString(" + ")}
-         |    AS BIGINT) AS persistence,
-         |  1 + (v - 1) % 9 = g4 AS agree
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same corrected-root ratio.
-    "agg_coeff_variation" ->
-      s"""WITH c AS (SELECT c_mktsegment AS seg,
-         |    CAST(FLOOR(c_acctbal) AS BIGINT) + 1000 AS dollars
-         |  FROM customer),
-         |a AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(dollars) AS BIGINT) AS sm,
-         |    CAST(SUM(dollars * dollars) AS BIGINT) AS ssq
-         |  FROM c GROUP BY seg),
-         |sq AS (SELECT *, ${Round12cOps.duckIsqrt("n * ssq - sm * sm")}
-         |    AS sd_n FROM a)
-         |SELECT seg, n, sm, ssq, sd_n, sd_n * 1000 // sm AS cv_milli
-         |FROM sq ORDER BY seg""".stripMargin,
-
-    // Same divisor-pair sweep over the same constant list.
-    "fn_aliquot_sum" ->
-      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-        |    CAST(p_partkey AS BIGINT) % 10000 + 2 AS n
-        |  FROM part WHERE p_partkey % 41 = 13),
-        |s AS (SELECT CAST(g AS BIGINT) AS dd
-        |  FROM generate_series(1, 100) AS gs(g)),
-        |pairs AS (SELECT pk, n, dd FROM b CROSS JOIN s
-        |  WHERE dd * dd <= n AND n % dd = 0),
-        |agg AS (SELECT pk, n,
-        |    CAST(SUM(dd + n // dd) AS BIGINT) AS pair_sum,
-        |    MAX(CASE WHEN dd * dd = n THEN dd ELSE 0 END) AS sq_dup
-        |  FROM pairs GROUP BY pk, n)
-        |SELECT pk, n, pair_sum - sq_dup - n AS aliquot,
-        |  CASE WHEN pair_sum - sq_dup - n = n THEN 'PERFECT'
-        |    WHEN pair_sum - sq_dup - n > n THEN 'ABUNDANT'
-        |    ELSE 'DEFICIENT' END AS cls
-        |FROM agg ORDER BY pk""".stripMargin,
-
-    // Same declared truncating reciprocals, same ppm identities.
-    "agg_atkinson_eps2" ->
-      """WITH c AS (SELECT c_mktsegment AS seg,
-        |    CAST(FLOOR(c_acctbal) AS BIGINT) + 1001 AS dollars
-        |  FROM customer),
-        |a AS (SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(dollars) AS BIGINT) AS sm,
-        |    CAST(SUM(1000000000 // dollars) AS BIGINT) AS recip_sum
-        |  FROM c GROUP BY seg),
-        |h AS (SELECT *, n * 1000000000 * 1000 // recip_sum AS hm_milli,
-        |    sm * 1000 // n AS am_milli FROM a)
-        |SELECT seg, n, sm, recip_sum, hm_milli, am_milli,
-        |  1000000 - hm_milli * 1000000 // am_milli AS atkinson_ppm
-        |FROM h ORDER BY seg""".stripMargin,
-
-    // Same trailing up-census.
-    "win_psy_line" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
-        |u AS (SELECT *, CASE WHEN c > lag(c, 1) OVER o THEN 1 ELSE 0 END
-        |      AS up,
-        |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
-        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-        |w AS (SELECT *, CAST(SUM(up) OVER (o ROWS 11 PRECEDING)
-        |      AS BIGINT) AS ups12
-        |  FROM u WINDOW o AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type, day, ups12, ups12 * 1000000 // 12 AS psy_ppm
-        |FROM w WHERE rn >= 13 ORDER BY event_type, day""".stripMargin,
-
-    // Same volume folds, same sign-split ratio.
-    "win_pvo" -> {
-      def stage(w: Seq[Long], dst: String) = {
-        val num = w.zipWithIndex.map { case (wt, i) =>
-          if (i == 0) s"$wt * vol"
-          else s"COALESCE($wt * lag(vol, $i) OVER o, 0)" }.mkString(" + ")
-        val den = w.zipWithIndex.map { case (wt, i) =>
-          if (i == 0) s"$wt"
-          else s"CASE WHEN lag(vol, $i) OVER o IS NULL THEN 0 ELSE $wt END" }
-          .mkString(" + ")
-        s"SELECT *, ($num) // ($den) AS $dst"
-      }
-      s"""WITH bar AS (SELECT event_type,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(COUNT(*) AS BIGINT) AS vol
-         |  FROM events GROUP BY 1, 2),
-         |s1 AS (${stage(Seq(8L, 4L, 2L, 1L), "ema_fast")} FROM bar
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |s2 AS (${stage(Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L), "ema_slow")}
-         |  FROM s1 WINDOW o AS (PARTITION BY event_type ORDER BY day))
-         |SELECT event_type, day, vol, ema_fast, ema_slow,
-         |  CASE WHEN ema_slow = 0 THEN 0
-         |    WHEN ema_fast < ema_slow
-         |      THEN -((ema_slow - ema_fast) * 1000000 // ema_slow)
-         |    ELSE (ema_fast - ema_slow) * 1000000 // ema_slow
-         |  END AS pvo_ppm
-         |FROM s2 ORDER BY event_type, day""".stripMargin
-    },
-
-    // Same nibble place values.
-    "fn_bcd_roundtrip" -> {
-      val pack = (0 until 6).map(i =>
-        s"(v // ${math.pow(10, i).toLong} % 10) * ${1L << (4 * i)}")
-        .mkString(" + ")
-      val unpack = (0 until 6).map(i =>
-        s"(bcd // ${1L << (4 * i)} % 16) * ${math.pow(10, i).toLong}")
-        .mkString(" + ")
-      s"""WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-         |    CAST(p_partkey AS BIGINT) * 131 % 1000000 AS v
-         |  FROM part WHERE p_partkey % 43 = 9),
-         |p AS (SELECT *, $pack AS bcd FROM b)
-         |SELECT pk, v, bcd, $unpack AS v_back,
-         |  ($unpack) = v AS roundtrip, bcd >= v AS expanded
-         |FROM p ORDER BY pk""".stripMargin
-    },
-
-    // Same bijective digit walk, same Horner re-parse.
-    "fn_excel_column" -> {
-      val az = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-      val walked = (0 until 4).foldLeft(
-        "(SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 400000 + 1 AS n, " +
-          "CAST(p_partkey AS BIGINT) % 400000 + 1 AS m0 " +
-          "FROM part WHERE p_partkey % 47 = 11)") { (prev, k) =>
-        s"(SELECT *, CASE WHEN m$k = 0 THEN -1 ELSE (m$k - 1) % 26 END " +
-          s"AS d$k, CASE WHEN m$k = 0 THEN 0 ELSE (m$k - 1) // 26 END " +
-          s"AS m${k + 1} FROM $prev)" }
-      val name = (3 to 0 by -1).map(k =>
-        s"CASE WHEN d$k >= 0 THEN SUBSTRING('$az', CAST(d$k AS INT) + 1, 1)" +
-          s" ELSE '' END").mkString("CONCAT(", ", ", ")")
-      val back = (1 to 4).map(i =>
-        s"CASE WHEN LENGTH(col_name) >= $i THEN " +
-          s"INSTR('$az', SUBSTRING(col_name, LENGTH(col_name) - $i + 1, 1))" +
-          s" * ${math.pow(26, i - 1).toLong} ELSE 0 END").mkString(" + ")
-      s"""SELECT pk, n, col_name, CAST($back AS BIGINT) AS n_back,
-         |  CAST($back AS BIGINT) = n AS roundtrip
-         |FROM (SELECT *, $name AS col_name FROM $walked)
-         |ORDER BY pk""".stripMargin
-    },
-
-    // Same richest-first crossing.
-    "agg_pareto_8020" ->
-      """WITH c AS (SELECT c_custkey, c_mktsegment AS seg,
-        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
-        |  FROM customer),
-        |r AS (SELECT *, CAST(SUM(cents) OVER (PARTITION BY seg)
-        |      AS BIGINT) AS total,
-        |    CAST(COUNT(*) OVER (PARTITION BY seg) AS BIGINT) AS n,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY seg
-        |      ORDER BY cents DESC, c_custkey) AS BIGINT) AS rk,
-        |    CAST(SUM(cents) OVER (PARTITION BY seg
-        |      ORDER BY cents DESC, c_custkey ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS cum
-        |  FROM c),
-        |x AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY rk)
-        |    AS pick FROM r WHERE cum * 5 >= total * 4)
-        |SELECT seg, n, total, rk, rk * 1000000 // n AS head_share_ppm
-        |FROM x WHERE pick = 1 ORDER BY seg""".stripMargin,
-
-    // Same weighted mod-11, same X symbol.
-    "fn_isbn10_check" -> {
-      val wsum = (1 to 9).map(i =>
-        s"$i * CAST(SUBSTRING(code9, $i, 1) AS BIGINT)").mkString(" + ")
-      s"""WITH b AS (SELECT o_orderkey AS okey,
-         |    LPAD(CAST(o_orderkey * 89 + 17 AS STRING), 9, '0') AS code9
-         |  FROM orders WHERE o_orderkey % 47 = 13),
-         |r AS (SELECT *, ($wsum) % 11 AS rem FROM b)
-         |SELECT okey, code9, rem,
-         |  CASE WHEN rem = 10 THEN 'X' ELSE CAST(rem AS STRING) END
-         |    AS chk_char,
-         |  CONCAT(code9, CASE WHEN rem = 10 THEN 'X'
-         |    ELSE CAST(rem AS STRING) END) AS isbn10,
-         |  (($wsum) + 10 * rem) % 11 = 0 AS valid
-         |FROM r ORDER BY okey""".stripMargin
-    },
-
-    // Same greedy chain through nested per-step SELECTs.
-    "fn_egyptian_fraction" -> {
-      val walked = (0 until 3).foldLeft(
-        "(SELECT pk, p0, q0 FROM (SELECT CAST(p_partkey AS BIGINT) AS pk, " +
-          "CAST(p_partkey AS BIGINT) % 98 + 2 AS q0, " +
-          "CAST(p_partkey AS BIGINT) * 7 % " +
-          "(CAST(p_partkey AS BIGINT) % 98 + 1) + 1 AS p0 " +
-          "FROM part WHERE p_partkey % 53 = 31))") { (prev, k) =>
-        s"(SELECT *, CASE WHEN p$k = 0 THEN 0 " +
-          s"ELSE (q$k + p$k - 1) // p$k END AS c${k + 1}, " +
-          s"CASE WHEN p$k = 0 THEN 0 ELSE p$k * (CASE WHEN p$k = 0 THEN 0 " +
-          s"ELSE (q$k + p$k - 1) // p$k END) - q$k END AS p${k + 1}, " +
-          s"CASE WHEN p$k = 0 THEN q$k ELSE q$k * (CASE WHEN p$k = 0 " +
-          s"THEN 0 ELSE (q$k + p$k - 1) // p$k END) END AS q${k + 1} " +
-          s"FROM $prev)" }
-      s"""SELECT pk, p0, q0, CAST(c1 AS BIGINT) AS c1,
-         |  CAST(c2 AS BIGINT) AS c2, CAST(c3 AS BIGINT) AS c3,
-         |  CAST(p3 AS BIGINT) AS p3, CAST(q3 AS BIGINT) AS q3
-         |FROM $walked ORDER BY pk""".stripMargin
-    },
-
-    // Same four folds, same sign-split ratio.
-    "win_tsi" -> {
-      val w = Seq(64L, 32L, 16L, 8L, 4L, 2L, 1L)
-      def stage(src: String, dst: String, signSplit: Boolean) = {
-        val num = w.zipWithIndex.map { case (wt, i) =>
-          if (i == 0) s"$wt * $src"
-          else s"COALESCE($wt * lag($src, $i) OVER o, 0)" }.mkString(" + ")
-        val den = w.zipWithIndex.map { case (wt, i) =>
-          if (i == 0) s"$wt"
-          else s"CASE WHEN lag($src, $i) OVER o IS NULL THEN 0 ELSE $wt END" }
-          .mkString(" + ")
-        if (signSplit)
-          s"""SELECT *, CASE WHEN ($num) < 0
-             |    THEN -((-($num)) // ($den)) ELSE ($num) // ($den) END
-             |    AS $dst""".stripMargin
-        else s"SELECT *, ($num) // ($den) AS $dst"
-      }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
-         |m AS (SELECT event_type, day, c - lag(c, 1) OVER o AS mom
-         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |mm AS (SELECT *, ABS(mom) AS amom FROM m WHERE mom IS NOT NULL),
-         |s1 AS (${stage("mom", "m1", signSplit = true)} FROM mm
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |s2 AS (${stage("m1", "m2", signSplit = true)} FROM s1
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |s3 AS (${stage("amom", "a1", signSplit = false)} FROM s2
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-         |s4 AS (${stage("a1", "a2", signSplit = false)} FROM s3
-         |  WINDOW o AS (PARTITION BY event_type ORDER BY day))
-         |SELECT event_type, day, mom, m2, a2,
-         |  CASE WHEN a2 = 0 THEN 0
-         |    WHEN m2 < 0 THEN -((-m2) * 1000000 // a2)
-         |    ELSE m2 * 1000000 // a2 END AS tsi_ppm
-         |FROM s4 ORDER BY event_type, day""".stripMargin
-    },
-
-    // Same n-scaled L1 numerator, same HUGEINT-widened ratio.
-    "agg_hoover_index" ->
-      """WITH c AS (SELECT c_mktsegment AS seg,
-        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
-        |  FROM customer),
-        |d AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY seg) AS BIGINT)
-        |      AS n,
-        |    CAST(SUM(cents) OVER (PARTITION BY seg) AS BIGINT) AS t
-        |  FROM c)
-        |SELECT seg, MAX(n) AS n, MAX(t) AS total,
-        |  CAST(SUM(ABS(n * cents - t)) AS BIGINT) AS sad_n,
-        |  CAST(CAST(SUM(ABS(n * cents - t)) AS HUGEINT) * 1000000
-        |    // (CAST(2 AS HUGEINT) * MAX(n) * MAX(t)) AS BIGINT)
-        |    AS hoover_ppm
-        |FROM d GROUP BY seg ORDER BY seg""".stripMargin,
-
-    // Same mixed radix.
-    "fn_mayan_long_count" ->
-      """WITH b AS (SELECT o_orderkey AS okey,
-        |    o_orderkey * 97 % 1872000 AS days
-        |  FROM orders WHERE o_orderkey % 53 = 29),
-        |p AS (SELECT *, days % 20 AS kin, days // 20 % 18 AS uinal,
-        |    days // 360 % 20 AS tun, days // 7200 % 20 AS katun,
-        |    days // 144000 AS baktun FROM b)
-        |SELECT okey, days,
-        |  CONCAT(baktun, '.', katun, '.', tun, '.', uinal, '.', kin) AS lc,
-        |  baktun * 144000 + katun * 7200 + tun * 360 + uinal * 20 + kin
-        |    AS days_back,
-        |  baktun * 144000 + katun * 7200 + tun * 360 + uinal * 20 + kin
-        |    = days AS roundtrip
-        |FROM p ORDER BY okey""".stripMargin,
-
-    // Same rank-exact top-4 share.
-    "agg_cr4" ->
-      """WITH c AS (SELECT c_custkey, c_mktsegment AS seg,
-        |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) + 100000 AS cents
-        |  FROM customer),
-        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY seg
-        |    ORDER BY cents DESC, c_custkey) AS BIGINT) AS rk FROM c)
-        |SELECT seg, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(cents) AS BIGINT) AS total,
-        |  CAST(SUM(CASE WHEN rk <= 4 THEN cents ELSE 0 END) AS BIGINT)
-        |    AS top4,
-        |  CAST(SUM(CASE WHEN rk <= 4 THEN cents ELSE 0 END) AS BIGINT)
-        |    * 1000000 // CAST(SUM(cents) AS BIGINT) AS cr4_ppm
-        |FROM r GROUP BY seg ORDER BY seg""".stripMargin,
-
-    // Same column sweep, same corrected root.
-    "fn_gauss_circle" ->
-      s"""WITH b AS (SELECT CAST(r_regionkey AS BIGINT) AS rk,
-         |    20 + CAST(r_regionkey AS BIGINT) * 15 AS r FROM region),
-         |s AS (SELECT CAST(g AS BIGINT) AS x
-         |  FROM generate_series(-80, 80) AS gs(g)),
-         |cols AS (SELECT rk, r, x,
-         |    2 * ${Round12cOps.duckIsqrt("r * r - x * x")} + 1 AS col_pts
-         |  FROM b CROSS JOIN s WHERE ABS(x) <= r)
-         |SELECT rk, r, CAST(SUM(col_pts) AS BIGINT) AS n_inside,
-         |  CAST(COUNT(*) AS BIGINT) AS n_cols
-         |FROM cols GROUP BY rk, r ORDER BY rk""".stripMargin,
-
-    // Same midpoint SMAs, same filtered-then-lagged saucer.
-    "win_awesome_osc" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day, MAX(cents) AS h, MIN(cents) AS l
-        |  FROM e GROUP BY 1, 2),
-        |m AS (SELECT *, (h + l) // 2 AS mid,
-        |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
-        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-        |sm AS (SELECT *,
-        |    CAST(SUM(mid) OVER (o ROWS 4 PRECEDING) AS BIGINT) // 5
-        |      AS sma5,
-        |    CAST(SUM(mid) OVER (o ROWS 12 PRECEDING) AS BIGINT) // 13
-        |      AS sma13
-        |  FROM m WINDOW o AS (PARTITION BY event_type ORDER BY day)),
-        |f AS (SELECT *, sma5 - sma13 AS ao FROM sm WHERE rn >= 13),
-        |g AS (SELECT *, lag(ao, 1) OVER o AS prev_ao
-        |  FROM f WINDOW o AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type, day, mid, sma5, sma13, ao,
-        |  prev_ao IS NOT NULL AND ao > prev_ao AS saucer
-        |FROM g ORDER BY event_type, day""".stripMargin,
-
-    // Same exact bar widths.
-    "fn_text_histogram" ->
-      """WITH c AS (SELECT c_mktsegment AS seg,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt FROM customer GROUP BY 1),
-        |m AS (SELECT *, CAST(MAX(cnt) OVER () AS BIGINT) AS mx FROM c)
-        |SELECT seg, cnt, cnt * 20 // mx AS width,
-        |  REPEAT('#', CAST(cnt * 20 // mx AS INT)) AS bar
-        |FROM m ORDER BY seg""".stripMargin,
-
-    // Same paired naive errors.
-    "agg_mase_naive" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
-        |er AS (SELECT event_type, ABS(c - lag(c, 1) OVER o) AS e1,
-        |    ABS(c - lag(c, 7) OVER o) AS e7
-        |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day))
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(e1) AS BIGINT) AS sae1,
-        |  CAST(SUM(e7) AS BIGINT) AS sae7,
-        |  CASE WHEN CAST(SUM(e7) AS BIGINT) = 0 THEN 0
-        |    ELSE CAST(SUM(e1) AS BIGINT) * 1000
-        |      // CAST(SUM(e7) AS BIGINT) END AS mase_milli
-        |FROM er WHERE e1 IS NOT NULL AND e7 IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Same Gregorian counting, same engine cross-check.
-    "fn_leap_count" ->
-      """WITH b AS (SELECT CAST(p_partkey AS BIGINT) AS pk,
-        |    1900 + CAST(p_partkey AS BIGINT) % 80 AS y1,
-        |    1900 + CAST(p_partkey AS BIGINT) % 80
-        |      + CAST(p_partkey AS BIGINT) % 40 + 1 AS y2
-        |  FROM part WHERE p_partkey % 59 = 17),
-        |l AS (SELECT *, ((y2 - 1) // 4 - (y2 - 1) // 100 + (y2 - 1) // 400)
-        |    - ((y1 - 1) // 4 - (y1 - 1) // 100 + (y1 - 1) // 400) AS leaps
-        |  FROM b)
-        |SELECT pk, y1, y2, leaps, 365 * (y2 - y1) + leaps AS span_days,
-        |  CAST(date_diff('day', make_date(CAST(y1 AS INT), 1, 1),
-        |    make_date(CAST(y2 AS INT), 1, 1)) AS BIGINT) AS engine_days,
-        |  365 * (y2 - y1) + leaps = date_diff('day',
-        |    make_date(CAST(y1 AS INT), 1, 1),
-        |    make_date(CAST(y2 AS INT), 1, 1)) AS agree
-        |FROM l ORDER BY pk""".stripMargin,
-
-    // Same subgroup stats, same declared A2 literal.
-    "agg_xbar_r_chart" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 // 7 AS week,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, week, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2, 3),
-        |wk AS (SELECT event_type, week, CAST(COUNT(*) AS BIGINT) AS sz,
-        |    CAST(SUM(c) AS BIGINT) AS wsum,
-        |    MAX(c) - MIN(c) AS wrange
-        |  FROM bar GROUP BY 1, 2),
-        |g AS (SELECT *, wsum * 1000 // sz AS xbar_milli,
-        |    CAST(SUM(wsum) OVER (PARTITION BY event_type) AS BIGINT)
-        |      * 1000 // CAST(SUM(sz) OVER (PARTITION BY event_type)
-        |      AS BIGINT) AS grand_milli,
-        |    CAST(SUM(wrange) OVER (PARTITION BY event_type) AS BIGINT)
-        |      * 1000 // CAST(COUNT(*) OVER (PARTITION BY event_type)
-        |      AS BIGINT) AS rbar_milli
-        |  FROM wk),
-        |c AS (SELECT *, grand_milli + 577 * rbar_milli // 1000 AS ucl_milli,
-        |    grand_milli - 577 * rbar_milli // 1000 AS lcl_milli FROM g)
-        |SELECT event_type, week, sz, xbar_milli, grand_milli, rbar_milli,
-        |  ucl_milli, lcl_milli,
-        |  xbar_milli > ucl_milli OR xbar_milli < lcl_milli
-        |    AS out_of_control
-        |FROM c ORDER BY event_type, week""".stripMargin
-  )
 }

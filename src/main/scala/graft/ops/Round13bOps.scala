@@ -25,7 +25,7 @@ object Round13bOps extends Family {
        |        ELSE ascii(substring($field, i, 1)) - 55 END)
        |  * element_at(array(7, 3, 1), ((i - 1) % 3) + 1)) % 10""".stripMargin
 
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // Bradley–Terry arena ranking — the LLM-eval leaderboard fit (Chatbot-
     // Arena style): pairwise battles between 6 models, winner drawn by the
     // exact Bradley–Terry generative law (event_id % (s_a+s_b) < s_a with
@@ -38,7 +38,7 @@ object Round13bOps extends Family {
     // the shape is one shuffle at any corpus size. Graded per model:
     // battles, wins, fitted strength (ppm) and rank — the planted order
     // 5..0 must come back.
-    "agg_bradley_terry" -> ((s, d) => {
+    Op("agg_bradley_terry", (s, d) => {
       val battles = Tables.events(s, d)
         .select((col("user_id") % 6).as("a"),
           (expr("user_id DIV 7") % 6).as("b"), col("event_id"))
@@ -79,796 +79,7 @@ object Round13bOps extends Family {
         .withColumn("rank", row_number().over(
           Window.orderBy(col("strength_ppm").desc, col("model"))))
         .orderBy("model")
-    }),
-
-    // Idempotency-key replay audit — the at-most-once bookkeeping every
-    // payment/request API runs: clients retry with the SAME idempotency
-    // key (planted: event ids ≡ 3,4,5 mod 7 share the key of the ≡3 id —
-    // triple-attempt keys at a known 1-in-7 key rate), the service must
-    // census the replay tax. Per principal: attempts vs distinct keys,
-    // replayed keys, the wasted-attempt mass, worst attempt fan-out and
-    // the widest first→last replay window (the dedup-cache TTL this
-    // measures). Two shuffles (key rollup, then principal rollup) at any
-    // scale; the window math is exact µs integers.
-    "service_idempotency_replay" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("event_id"), col("ts_us"))
-        .withColumn("idem_key", col("event_id") -
-          when(col("event_id") % 7 === 4, 1L)
-            .when(col("event_id") % 7 === 5, 2L).otherwise(0L))
-        .groupBy("idem_key")
-        .agg(count(lit(1)).as("attempts"),
-          (max("ts_us") - min("ts_us")).as("span_us"))
-        .groupBy((col("idem_key") % 8).as("principal"))
-        .agg(sum("attempts").as("n_attempts"),
-          count(lit(1)).as("n_keys"),
-          sum(when(col("attempts") >= 2, 1L).otherwise(0L)).as("n_replayed"),
-          max("attempts").as("max_attempts"),
-          max("span_us").as("max_replay_window_us"))
-        .withColumn("wasted_attempts", col("n_attempts") - col("n_keys"))
-        .withColumn("replay_ppm",
-          expr("(n_replayed * 1000000) DIV n_keys"))
-        .orderBy("principal")
-    }),
-
-    // Passport MRZ check-digit validation (ICAO 9303) — the identity-
-    // document gate a person service runs at onboarding: the 9-char
-    // document number's check digit is the 7-3-1 weighted sum mod 10
-    // over the 0-9/A-Z/< value alphabet. Issuance computes the digit
-    // from the true number; presentation corrupts one char for every
-    // custkey ≡ 7 mod 11 (a +1 alphabet shift at position 5, weight 3 —
-    // provably never check-neutral since 3·δ ≢ 0 mod 10 for δ ∈
-    // {1,-9,-5}); validation recomputes from the PRESENTED chars. The
-    // per-row work is a constant 9-step fold (codegen'd higher-order
-    // aggregate, no UDF); census per market segment: documents, failed
-    // checks (exactly the planted corruption class), failure ppm, and
-    // the carried-digit sum as a checksum-of-checksums.
-    "fn_mrz_check" -> ((s, d) => {
-      Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment"))
-        .withColumn("doc_no",
-          upper(expr("substring(md5(CAST(c_custkey AS STRING)), 1, 9)")))
-        .withColumn("carried_cd", expr(mrzCd("doc_no")))
-        .withColumn("presented",
-          when(col("c_custkey") % 11 === 7,
-            expr("""concat(substring(doc_no, 1, 4),
-                   |  CASE WHEN substring(doc_no, 5, 1) = '9' THEN '0'
-                   |       WHEN substring(doc_no, 5, 1) = 'F' THEN 'A'
-                   |       ELSE chr(ascii(substring(doc_no, 5, 1)) + 1) END,
-                   |  substring(doc_no, 6, 4))""".stripMargin))
-            .otherwise(col("doc_no")))
-        .withColumn("recomputed_cd", expr(mrzCd("presented")))
-        .withColumn("valid", col("recomputed_cd") === col("carried_cd"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(!col("valid"), 1L).otherwise(0L)).as("n_failed"),
-          sum("carried_cd").as("carried_cd_sum"))
-        .withColumn("fail_ppm", expr("(n_failed * 1000000) DIV n_docs"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // Population Stability Index — the model-monitoring drift gate (the
-    // score-distribution sibling of agg_ks_drift): baseline vs current
-    // populations split by user parity, a planted +80 score shift on two
-    // event types in the current half (two full bins of drift — the
-    // undrifted types stay near zero). PSI = Σ (p_c − p_b)·ln(p_c/p_b)
-    // over 10 equal-width bins, each bin's term rounded to integer
-    // micro-units BEFORE the sum (association-order free, the
-    // agg_entropy exactness law); bins empty on either side are skipped
-    // under the same rule in both engines and censused. Every term is
-    // mathematically ≥ 0, so the sum is a true divergence. One shuffle
-    // to the (type, bin) grid, then a bounded window + rollup.
-    "agg_psi_stability" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("event_type"), (col("user_id") % 2).as("period"),
-          (col("value") + when(col("user_id") % 2 === 1 &&
-            col("event_type").isin("error", "purchase"), 80.0)
-            .otherwise(0.0)).as("score"))
-        .withColumn("bin", least(floor(col("score") / 40).cast("int"), lit(9)))
-        .groupBy("event_type", "bin")
-        .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("b"),
-          sum(when(col("period") === 1, 1L).otherwise(0L)).as("c"))
-        .withColumn("bt", sum("b").over(Window.partitionBy("event_type")))
-        .withColumn("ct", sum("c").over(Window.partitionBy("event_type")))
-        .withColumn("term_micro",
-          when(col("b") > 0 && col("c") > 0, expr(
-            """CAST(round((CAST(c AS DOUBLE) / ct - CAST(b AS DOUBLE) / bt)
-              |  * ln((CAST(c AS DOUBLE) * bt) / (CAST(b AS DOUBLE) * ct)) * 1000000) AS BIGINT)"""
-              .stripMargin)).otherwise(lit(0L)))
-        .groupBy("event_type")
-        .agg(max("bt").as("base_n"), max("ct").as("cur_n"),
-          sum(when(col("b") > 0 && col("c") > 0, 1L).otherwise(0L)).as("bins_used"),
-          sum("term_micro").as("psi_micro"))
-        .withColumn("drift", col("psi_micro") >= 200000L)
-        .orderBy("event_type")
-    }),
-
-    // Circuit breaker — the request-indexed failure guard (time-window
-    // breakers starve on sparse traffic; production breakers count the
-    // trailing N calls): per service the last-20-requests failure count
-    // in the (ts_us, event_id) total order, OPEN at ≥ 8/20. Failures =
-    // error events plus planted dependency-outage blocks (every 13th
-    // 50-event id block fails wholesale — dense runs that provably trip
-    // the breaker at any scale). Trip episodes = gaps-and-islands over
-    // the open flag; census per service: requests, open requests, trips,
-    // longest open run, worst window pressure. Two stacked windows + two
-    // rollups, all partitioned by service — no global sort at any scale.
-    "service_circuit_breaker" -> ((s, d) => {
-      val w20 = Window.partitionBy("service").orderBy("ts_us", "event_id")
-        .rowsBetween(-19, 0)
-      val wSeq = Window.partitionBy("service").orderBy("ts_us", "event_id")
-      val wOpen = Window.partitionBy("service", "open").orderBy("ts_us", "event_id")
-      val flagged = Tables.events(s, d)
-        .select((col("user_id") % 4).as("service"), col("event_id"),
-          col("ts_us"), col("event_type"))
-        .withColumn("fail", when(col("event_type") === "error" ||
-          expr("event_id DIV 50") % 13 === 7, 1L).otherwise(0L))
-        .withColumn("werr", sum("fail").over(w20))
-        .withColumn("open", (col("werr") >= 8L).cast("int"))
-        .withColumn("island",
-          row_number().over(wSeq) - row_number().over(wOpen))
-      val runs = flagged.where(col("open") === 1)
-        .groupBy("service", "island")
-        .agg(count(lit(1)).as("run_len"))
-        .groupBy("service")
-        .agg(count(lit(1)).as("n_trips"), max("run_len").as("longest_open_run"))
-      flagged.groupBy("service")
-        .agg(count(lit(1)).as("n_requests"),
-          sum("open").as("open_requests"),
-          max("werr").as("max_window_fails"))
-        .join(runs, Seq("service"), "left")
-        .na.fill(0L, Seq("n_trips", "longest_open_run"))
-        .orderBy("service")
-    }),
-
-    // RAG context packing under a token budget — the inference-side
-    // sibling of llm_concat_packing (which packs TRAINING sequences):
-    // per query, candidate passages ranked by relevance, greedily packed
-    // in rank order until the 256-token context budget closes. The
-    // fixture's 64 queries × md5 relevance (top-10% filter) stand in for
-    // an ANN candidate stage — the broadcast cross join SCORES 64× the doc
-    // mass (that is the evaluated volume); the score≥900 filter then prunes
-    // the surviving candidates to a fixed 6.4× before the window. Both are
-    // linear in corpus size; the pack itself is one per-query
-    // running sum (never a knapsack solve — rank-greedy is what serving
-    // stacks run). Census per query bucket: packed passages, packed
-    // tokens, boundary casualties (the first passage that no longer
-    // fit), budget utilization ppm.
-    "llm_rag_budget_pack" -> ((s, d) => {
-      val q = s.range(64).select(col("id").as("q"))
-      val wPack = Window.partitionBy("q")
-        .orderBy(col("score").desc, col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-        .crossJoin(broadcast(q))
-        .withColumn("score", expr(
-          s"${md5Bits("concat(CAST(q AS STRING), ':', CAST(doc_id AS STRING))", 6)} % 1000"))
-        .where(col("score") >= 900)
-        .withColumn("tok", expr("n_chars DIV 4"))
-        .withColumn("cumtok", sum("tok").over(wPack))
-        .groupBy((col("q") % 8).as("q_bucket"))
-        .agg(countDistinct("q").as("n_queries"),
-          sum(when(col("cumtok") <= 256, 1L).otherwise(0L)).as("n_packed"),
-          sum(when(col("cumtok") <= 256, col("tok")).otherwise(0L)).as("packed_tokens"),
-          sum(when(col("cumtok") > 256 && col("cumtok") - col("tok") <= 256, 1L)
-            .otherwise(0L)).as("boundary_dropped"))
-        .withColumn("util_ppm",
-          expr("(packed_tokens * 1000000) DIV (n_queries * 256)"))
-        .orderBy("q_bucket")
-    }),
-
-    // Retry-storm / backoff-discipline audit — the client-behavior twin
-    // of service_idempotency_replay (which counts replays; this one
-    // judges their TIMING): the request log viewed as 4-attempt retry
-    // chains, inter-attempt gaps from the (ts_us, event_id) total order,
-    // a chain VIOLATES exponential-backoff discipline when any later gap
-    // shrinks below its predecessor (the thundering-herd signature an
-    // SRE pages on). Per service: chains, attempts, amplification ppm,
-    // violating chains + ppm, and the tightest observed retry gap (the
-    // µs burst floor). Two stacked lags inside one chain window + two
-    // rollups; everything partitioned by chain then service.
-    "service_retry_storm" -> ((s, d) => {
-      val wc = Window.partitionBy("chain").orderBy("ts_us", "event_id")
-      val chains = Tables.events(s, d)
-        .select(col("event_id"), col("ts_us"))
-        .withColumn("chain", expr("event_id DIV 4"))
-        .withColumn("gap", col("ts_us") - lag("ts_us", 1).over(wc))
-        .withColumn("shrunk",
-          when(col("gap") < lag("gap", 1).over(wc), 1L).otherwise(0L))
-        .groupBy("chain")
-        .agg(count(lit(1)).as("attempts"), max("shrunk").as("viol"),
-          min("gap").as("min_gap"))
-      chains.groupBy((col("chain") % 4).as("service"))
-        .agg(count(lit(1)).as("n_chains"), sum("attempts").as("n_attempts"),
-          sum("viol").as("violating_chains"),
-          min("min_gap").as("min_gap_us"))
-        .withColumn("amplification_ppm",
-          expr("(n_attempts * 1000000) DIV n_chains"))
-        .withColumn("violation_ppm",
-          expr("(violating_chains * 1000000) DIV n_chains"))
-        .orderBy("service")
-    }),
-
-    // Word-error-rate eval by token fingerprinting — mm_asr_cer_eval's
-    // word-level sibling: the reference's first 12 words are ENCODED one
-    // char per word (md5 fingerprint → A-Z; collisions are the declared
-    // approximation both engines share bit-for-bit), so word-level edit
-    // distance reduces to the same constant-bounded Levenshtein DP the
-    // CER op runs — a 12² ceiling per row, linear in docs at any scale.
-    // Hypothesis corruptions per class: every 3rd word dropped (regex
-    // group surgery on the encoding), leading word swap, clean. Graded
-    // per (source, class): docs, WER-ppm mass, worst WER.
-    "llm_wer_eval" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          expr(s"""array_join(transform(slice(split(text, ' '), 1, 12),
-                 |  w -> chr(65 + ${md5Bits("w", 4)} % 26)), '')""".stripMargin).as("enc"),
-          expr("least(size(split(text, ' ')), 12)").as("n_words"))
-        .withColumn("class",
-          when(col("doc_id") % 3 === 0, lit("drop3"))
-            .when(col("doc_id") % 3 === 1, lit("swap")).otherwise(lit("clean")))
-        .withColumn("hyp",
-          when(col("class") === "drop3",
-            regexp_replace(col("enc"), "(..).", "$1"))
-            .when(col("class") === "swap" && length(col("enc")) >= 2,
-              expr("concat(substring(enc, 2, 1), substring(enc, 1, 1), substring(enc, 3))"))
-            .otherwise(col("enc")))
-        .withColumn("wer_ppm", expr(
-          "(levenshtein(enc, hyp) * CAST(1000000 AS BIGINT)) DIV n_words"))
-        .groupBy("source", "class")
-        .agg(count(lit(1)).as("n_docs"), sum("wer_ppm").as("wer_ppm_mass"),
-          max("wer_ppm").as("worst_wer_ppm"))
-        .orderBy("source", "class")
-    }),
-
-    // Stable keyed pseudonymization — the GDPR-grade tokenization every
-    // person warehouse ships (warehouse_masked_view hides columns; this
-    // op REPLACES the join key and must prove referential integrity
-    // survives): pseudo = keyed md5 prefix of the customer key, applied
-    // independently to the customer dim and the orders fact, then the
-    // fact re-joined to the dim ON THE PSEUDONYM. Graded per segment:
-    // customers vs distinct pseudonyms and the max keys-per-pseudonym
-    // (the collision census — 48 bits keeps it 1:1 at any graded scale),
-    // plus the order count and cents mass that survive the pseudonym
-    // join. One shuffle join on the pseudonym + two rollups.
-    "warehouse_pseudonym_consistent" -> ((s, d) => {
-      def pseudo(key: String) = expr(
-        s"upper(substring(md5(concat('pepper2024:', CAST($key AS STRING))), 1, 12))")
-      val cust = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment"), pseudo("c_custkey").as("pseudo"))
-      val perPseudo = cust.groupBy("c_mktsegment", "pseudo")
-        .agg(count(lit(1)).as("keys"))
-        .groupBy("c_mktsegment")
-        .agg(sum("keys").as("n_customers"), count(lit(1)).as("n_pseudonyms"),
-          max("keys").as("max_keys_per_pseudo"))
-      val ordSide = Tables.orders(s, d)
-        .select(pseudo("o_custkey").as("pseudo"), col("o_totalprice"))
-        .join(cust.select("pseudo", "c_mktsegment"), Seq("pseudo"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("order_cents"))
-      perPseudo.join(ordSide, Seq("c_mktsegment"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // Impossible-travel detection — the account-takeover heuristic every
-    // person-service security team runs: each login resolves to a city
-    // grid cell (home cell per user; planted md5 trips relocate every
-    // 17th event), consecutive logins per user in the (ts_us, event_id)
-    // total order yield a Chebyshev grid distance and an EXACT integer
-    // speed (units·3600e6 DIV Δµs — no haversine floats to drift), a
-    // transition is IMPOSSIBLE above 900 units/h. Per principal bucket:
-    // transitions, relocations, impossible count + ppm, worst observed
-    // speed. One user-partitioned lag window + one rollup.
-    "service_impossible_travel" -> ((s, d) => {
-      val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-        .withColumn("city",
-          when(col("event_id") % 17 === 3, col("event_id") % 20)
-            .otherwise(col("user_id") % 20))
-        .withColumn("x", (col("city") % 5) * 1000)
-        .withColumn("y", expr("city DIV 5") * 1000)
-        .withColumn("dist", greatest(
-          abs(col("x") - lag("x", 1).over(wu)),
-          abs(col("y") - lag("y", 1).over(wu))))
-        .withColumn("dt_us",
-          greatest(col("ts_us") - lag("ts_us", 1).over(wu), lit(1L)))
-        .withColumn("speed", expr("(dist * 3600000000) DIV dt_us"))
-        .where(col("dist").isNotNull)
-        .groupBy((col("user_id") % 8).as("principal"))
-        .agg(count(lit(1)).as("n_transitions"),
-          sum(when(col("dist") > 0, 1L).otherwise(0L)).as("n_moves"),
-          sum(when(col("speed") > 900L, 1L).otherwise(0L)).as("n_impossible"),
-          max("speed").as("max_speed"))
-        .withColumn("impossible_ppm",
-          expr("(n_impossible * 1000000) DIV n_transitions"))
-        .orderBy("principal")
-    }),
-
-    // Subtitle-to-speech alignment — the mm tier's interval-join QA: even
-    // events are SPEECH segments, odd events are subtitle CUES (duration
-    // = value·10⁴ µs, up to ~3.3 s), both per session (user). Candidate
-    // pairs are BLOCKED on the (user, start-hour) cell — the declared
-    // alignment window every subtitle QA tool uses; pairs straddling an
-    // hour boundary are out of scope by that rule in BOTH engines, and
-    // the cell population is bounded (traffic/hour), so the join is
-    // linear at any scale, never |cues|×|segments|. A cue is MATCHED if
-    // any segment overlaps it, ALIGNED if some segment covers ≥ half of
-    // it (exact integer µs overlap). Per principal bucket: cues, matched,
-    // aligned, orphans, total overlap mass.
-    "mm_subtitle_align" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          expr("CAST(FLOOR(value * 10000) AS BIGINT)").as("dur_us"))
-        .withColumn("hour", expr("ts_us DIV 3600000000"))
-      val segs = ev.where(col("event_id") % 2 === 0)
-        .select(col("user_id"), col("hour"), col("ts_us").as("s_start"),
-          (col("ts_us") + col("dur_us")).as("s_end"))
-      val cues = ev.where(col("event_id") % 2 === 1)
-        .select(col("user_id"), col("hour"), col("event_id").as("cue_id"),
-          col("ts_us").as("c_start"), (col("ts_us") + col("dur_us")).as("c_end"))
-      val perCue = cues.join(segs, Seq("user_id", "hour"), "left")
-        .withColumn("overlap", greatest(
-          least(col("c_end"), col("s_end")) -
-            greatest(col("c_start"), col("s_start")), lit(0L)))
-        .groupBy(col("user_id"), col("cue_id"),
-          (col("c_end") - col("c_start")).as("c_dur"))
-        .agg(sum(when(col("overlap") > 0, 1L).otherwise(0L)).as("n_overlapping"),
-          max(coalesce(col("overlap"), lit(0L))).as("best_overlap"),
-          sum(coalesce(col("overlap"), lit(0L))).as("overlap_mass"))
-      perCue.groupBy((col("user_id") % 8).as("principal"))
-        .agg(count(lit(1)).as("n_cues"),
-          sum(when(col("n_overlapping") > 0, 1L).otherwise(0L)).as("matched_cues"),
-          sum(when(col("best_overlap") * 2 >= col("c_dur"), 1L).otherwise(0L))
-            .as("aligned_cues"),
-          sum(when(col("n_overlapping") === 0, 1L).otherwise(0L)).as("orphan_cues"),
-          sum("overlap_mass").as("overlap_mass_us"))
-        .orderBy("principal")
-    }),
-
-    // Crawl-frontier scheduling — the politeness-budgeted fetch plan a
-    // web-corpus pipeline runs upstream of everything else: URLs (docs)
-    // grouped by host (source × md5 shard), ranked inside each host by
-    // (priority desc, doc_id), and drained at ≤ 2 fetches per host per
-    // round (the crawl-delay law), so a URL's round = (host-rank−1) DIV 2.
-    // Per source: URLs, hosts, rounds-to-drain (frontier latency), the
-    // round-0 share — the scheduling telemetry that decides crawler
-    // capacity. One host-partitioned rank window + one rollup; hosts
-    // scale with the corpus so no partition ever exceeds its own host's
-    // URL count.
-    "llm_crawl_frontier_plan" -> ((s, d) => {
-      val wh = Window.partitionBy("host").orderBy(col("prio").desc, col("doc_id"))
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"))
-        .withColumn("host", concat(col("source"), lit("-"),
-          (col("doc_id") % 50).cast("string")))
-        .withColumn("prio", expr(
-          s"${md5Bits("url", "doc_id", 6)} % 1000"))
-        .withColumn("rn", row_number().over(wh))
-        .withColumn("round", expr("(CAST(rn AS BIGINT) - 1) DIV 2"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_urls"),
-          countDistinct("host").as("n_hosts"),
-          (max("round") + 1).as("rounds_to_drain"),
-          sum(when(col("round") === 0, 1L).otherwise(0L)).as("round0_urls"))
-        .withColumn("round0_share_ppm",
-          expr("(round0_urls * 1000000) DIV n_urls"))
-        .orderBy("source")
-    }),
-
-    // MoE router load-balance audit — the expert-parallel training
-    // telemetry (a skewed router starves experts and blows the all-to-all
-    // step): tokens route top-2 over 16 experts per layer (md5 gates; the
-    // second choice re-indexed past the first so the pair is always
-    // distinct — the standard distinct-sampling trick). Per layer the
-    // exact integer balance factor n_experts·Σload² ·1e6 DIV (Σload)² —
-    // EXACTLY 1e6 when perfectly balanced, growing with skew (the L2
-    // imbalance every MoE paper reports), plus max-load ppm and the
-    // expert census. One shuffle to (layer, expert), bounded rollups.
-    "llm_moe_router_balance" -> ((s, d) => {
-      val routed = Tables.events(s, d)
-        .select(col("event_id"), (col("event_id") % 4).as("layer"))
-        .withColumn("e1", expr(
-          s"${md5Bits("e1", "event_id", 6)} % 16"))
-        .withColumn("e2r", expr(
-          s"${md5Bits("e2", "event_id", 6)} % 15"))
-        .withColumn("e2", when(col("e2r") >= col("e1"), col("e2r") + 1)
-          .otherwise(col("e2r")))
-      val loads = routed.select(col("layer"), col("e1").as("expert"))
-        .unionByName(routed.select(col("layer"), col("e2").as("expert")))
-        .groupBy("layer", "expert")
-        .agg(count(lit(1)).as("load"))
-      loads.groupBy("layer")
-        .agg(sum("load").as("n_assignments"),
-          count(lit(1)).as("experts_used"),
-          max("load").as("max_load"),
-          sum(col("load") * col("load")).as("l2"))
-        .select(col("layer"),
-          expr("n_assignments DIV 2").as("n_tokens"),
-          col("n_assignments"), col("experts_used"),
-          expr("(max_load * 1000000) DIV n_assignments").as("max_load_ppm"),
-          // DECIMAL(38,0) product chain: l2 ~ n^2/16, so 16*l2*1e6 overflows
-          // Long near ~3M assignments/layer — route through decimal exactly
-          // as service_composite_slo does (HUGEINT on the DuckDB side).
-          expr("""CAST((CAST(16 AS DECIMAL(38,0)) * l2 * 1000000)
-                 |  DIV (CAST(n_assignments AS DECIMAL(38,0)) * n_assignments)
-                 |  AS BIGINT)""".stripMargin)
-            .as("balance_factor_ppm"))
-        .orderBy("layer")
-    }),
-
-    // Temporal frame dedup — the video-preprocessing pass that drops
-    // near-identical consecutive frames BEFORE any decode/embedding cost:
-    // frames (events per session) carry a 60-bit perceptual hash that is
-    // stable within a 5-frame SHOT (planted: same md5 base XOR a ≤2-bit
-    // jitter; shots keyed by frame sequence, not wall-clock, so the plant
-    // holds at sparse and dense traffic alike) and random across shots; a
-    // frame is DROPPED when its Hamming distance to the PREDECESSOR is
-    // ≤ 4 (lag-1 greedy — the streaming-friendly rule, one window, no
-    // pairwise). bit_count(xor) is codegen'd in both engines. Per
-    // principal: frames, dropped, kept, drop ppm — the decode-cost
-    // saving this pass buys.
-    "mm_frame_dedup_temporal" -> ((s, d) => {
-      val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-        .withColumn("shot", expr("(CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) - 1) DIV 5"))
-        .withColumn("phash", expr(
-          md5Bits("concat('ph:', CAST(user_id AS STRING), ':', CAST(shot AS STRING))", 15))
-          .bitwiseXOR(col("event_id") % 3))
-        .withColumn("prev", lag("phash", 1).over(wu))
-        .withColumn("dropped", when(col("prev").isNotNull &&
-          bit_count(col("phash").bitwiseXOR(col("prev"))) <= 4, 1L).otherwise(0L))
-        .groupBy((col("user_id") % 8).as("principal"))
-        .agg(count(lit(1)).as("n_frames"), sum("dropped").as("n_dropped"))
-        .withColumn("n_kept", col("n_frames") - col("n_dropped"))
-        .withColumn("drop_ppm", expr("(n_dropped * 1000000) DIV n_frames"))
-        .orderBy("principal")
-    }),
-
-    // Semantic-version ordering — the deployment-ledger gate that
-    // lexicographic MAX silently corrupts (v2.9.9 > v2.9.19 as strings):
-    // component versions rendered as strings, re-PARSED by anchored
-    // regexp_extract (the fn surface under test), latest picked by
-    // max_by on the exact numeric key, and the lexicographic answer
-    // carried beside it with a divergence flag — the proof the numeric
-    // path matters. One rollup per component.
-    "fn_semver_latest" -> ((s, d) => {
-      Tables.orders(s, d)
-        .select((col("o_orderkey") % 12).as("component"),
-          concat(lit("v"), (col("o_orderkey") % 3).cast("string"), lit("."),
-            (expr("o_orderkey DIV 3") % 10).cast("string"), lit("."),
-            (expr("o_orderkey DIV 30") % 20).cast("string")).as("version"))
-        .withColumn("maj", regexp_extract(col("version"),
-          "^v(\\d+)\\.(\\d+)\\.(\\d+)$", 1).cast("bigint"))
-        .withColumn("min_", regexp_extract(col("version"),
-          "^v(\\d+)\\.(\\d+)\\.(\\d+)$", 2).cast("bigint"))
-        .withColumn("pat", regexp_extract(col("version"),
-          "^v(\\d+)\\.(\\d+)\\.(\\d+)$", 3).cast("bigint"))
-        .withColumn("numkey",
-          col("maj") * 1000000L + col("min_") * 1000L + col("pat"))
-        .groupBy("component")
-        .agg(count(lit(1)).as("n_versions"),
-          countDistinct("version").as("n_distinct_versions"),
-          expr("max_by(version, numkey)").as("latest_semver"),
-          max("version").as("lex_max"))
-        .withColumn("lex_wrong", col("latest_semver") =!= col("lex_max"))
-        .orderBy("component")
-    }),
-
-    // Retention vs legal-hold conflict audit — the governance collision
-    // every DPO adjudicates: the TTL policy says DELETE (order older than
-    // the per-segment retention horizon, measured against the corpus
-    // high-water mark so the audit replays exactly), the litigation-hold
-    // ledger says KEEP (planted: every custkey ≡ 5 mod 23 is under
-    // hold). The sweep may only remove EXPIRED ∧ ¬HELD; conflicted rows
-    // (expired ∧ held) go to the review queue. Per segment: rows,
-    // expired, held, conflicts, deletable, and the deletable cents mass
-    // leaving the warehouse. Broadcast horizon + one rollup.
-    "warehouse_retention_legal_hold" -> ((s, d) => {
-      val o = Tables.orders(s, d)
-      val hwm = o.agg(max("o_orderdate").as("hwm"))
-      o.select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
-        .join(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
-          col("o_custkey") === col("c_custkey"))
-        .crossJoin(broadcast(hwm))
-        .withColumn("horizon_days",
-          when(col("c_mktsegment").isin("BUILDING", "MACHINERY"), 365)
-            .otherwise(540))
-        .withColumn("expired",
-          datediff(col("hwm"), col("o_orderdate")) > col("horizon_days"))
-        .withColumn("held", col("o_custkey") % 23 === 5)
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(when(col("expired"), 1L).otherwise(0L)).as("n_expired"),
-          sum(when(col("held"), 1L).otherwise(0L)).as("n_held"),
-          sum(when(col("expired") && col("held"), 1L).otherwise(0L)).as("n_conflicts"),
-          sum(when(col("expired") && !col("held"), 1L).otherwise(0L)).as("n_deletable"),
-          sum(when(col("expired") && !col("held"),
-            expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).otherwise(0L))
-            .as("deletable_cents"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // API version adoption / deprecation readiness — the service-owner
-    // dashboard before turning an endpoint off: calls carry an API
-    // version (md5-assigned: a 0.5% ancient v0 — under the 1% bar, so
-    // READY — and an 8% legacy v1 that is not), graded per (version,
-    // week): call share in exact ppm via the week-total broadcast, plus
-    // per version the last active week and the READY flag — share over
-    // the TRAILING 4 WEEKS < 1% (a single final week is too small a
-    // sample to turn an endpoint off on; the trailing window is the
-    // production rule). Two rollups + broadcast joins — no windows over
-    // the raw log.
-    "service_api_version_adoption" -> ((s, d) => {
-      val calls = Tables.events(s, d)
-        .select(expr("ts_us DIV 604800000000").as("week"),
-          expr(s"""CASE WHEN ${md5Bits("ver", "event_id", 6)} % 1000 < 5
-                 |THEN 'v0'
-                 |WHEN ${md5Bits("ver", "event_id", 6)} % 1000 < 85
-                 |THEN 'v1' ELSE 'v2' END""".stripMargin).as("version"))
-      val perWeek = calls.groupBy("week", "version")
-        .agg(count(lit(1)).as("calls"))
-      val weekTot = perWeek.groupBy("week").agg(sum("calls").as("week_calls"))
-      val lastWeek = weekTot.agg(max("week").as("final_week"))
-      val trailTot = weekTot.crossJoin(broadcast(lastWeek))
-        .where(col("week") > col("final_week") - 4)
-        .agg(sum("week_calls").as("trail_total"))
-      perWeek.join(broadcast(weekTot), Seq("week"))
-        .withColumn("share_ppm", expr("(calls * 1000000) DIV week_calls"))
-        .crossJoin(broadcast(lastWeek))
-        .groupBy("version")
-        .agg(sum("calls").as("total_calls"),
-          count(lit(1)).as("active_weeks"),
-          max("week").as("last_active_week"),
-          expr("max_by(share_ppm, week)").as("final_week_share_ppm"),
-          sum(when(col("week") > col("final_week") - 4, col("calls"))
-            .otherwise(0L)).as("trailing4w_calls"))
-        .crossJoin(broadcast(trailTot))
-        .withColumn("trailing4w_share_ppm",
-          expr("(trailing4w_calls * 1000000) DIV trail_total"))
-        .withColumn("deprecation_ready", col("trailing4w_share_ppm") < 10000L)
-        .select("version", "total_calls", "active_weeks", "last_active_week",
-          "final_week_share_ppm", "trailing4w_calls", "trailing4w_share_ppm",
-          "deprecation_ready")
-        .orderBy("version")
-    }),
-
-    // Teacher–student distillation agreement — the eval gate before a
-    // distilled model ships: teacher labels from the embeddings table,
-    // student predictions planted to flip every vec_id ≡ 2 mod 9 to the
-    // next class (a known ~11% disagreement mass). Per teacher class:
-    // support, agreements, exact agreement ppm, and the dominant
-    // confusion target via max_by over the off-diagonal census — the
-    // per-class error anatomy a distillation run is judged on. Two
-    // bounded rollups after one scan.
-    "llm_distill_agreement" -> ((s, d) => {
-      val k = 8 // embeddings.label classes are bounded; fold into 8
-      val preds = Tables.embeddings(s, d)
-        .select(col("vec_id"), (col("label") % k).as("teacher"))
-        .withColumn("student",
-          when(col("vec_id") % 9 === 2, (col("teacher") + 1) % k)
-            .otherwise(col("teacher")))
-      val confusion = preds.groupBy("teacher", "student")
-        .agg(count(lit(1)).as("n"))
-      confusion.groupBy("teacher")
-        .agg(sum("n").as("support"),
-          sum(when(col("student") === col("teacher"), col("n")).otherwise(0L))
-            .as("agreements"),
-          expr("max_by(student, CASE WHEN student = teacher THEN -1 ELSE n END)")
-            .as("top_confusion"))
-        .withColumn("agreement_ppm",
-          expr("(agreements * 1000000) DIV support"))
-        .orderBy("teacher")
-    }),
-
-    // Schema-registry compatibility matrix — the evolution gate between
-    // consecutive schema versions (source_schema_evolution reads the
-    // DATA; this op grades the REGISTRY rules that decide whether a
-    // version may ship at all): 8 versions over a 15-field universe,
-    // each version widening by one field per two versions and dropping
-    // one planted field from v5 on; field i is REQUIRED iff i % 3 ≠ 0.
-    // BACKWARD compatible (new reader, old data) ⇔ nothing REQUIRED was
-    // added; FORWARD (old reader, new data) ⇔ nothing REQUIRED was
-    // dropped. Set-diffs via one full-outer join per consecutive pair —
-    // registry-scale metadata, the engine shape is the join grammar.
-    "warehouse_schema_registry_compat" -> ((s, d) => {
-      val fields = s.range(8).select(col("id").as("version"))
-        .crossJoin(s.range(15).select(col("id").as("field")))
-        .where(col("field") < lit(10) + expr("version DIV 2") &&
-          !(col("field") === col("version") - 3 && col("version") >= 5))
-        .withColumn("required", col("field") % 3 =!= 0)
-      val prev = fields.select((col("version") + 1).as("version"),
-        col("field").as("p_field"), col("required").as("p_required"))
-      val cur = fields.select(col("version"), col("field").as("c_field"),
-        col("required").as("c_required"))
-      cur.join(prev, cur("version") === prev("version") &&
-          cur("c_field") === prev("p_field"), "full")
-        .where(coalesce(cur("version"), prev("version")).between(1, 7))
-        .select(coalesce(cur("version"), prev("version")).as("v"),
-          col("c_field"), col("p_field"),
-          col("c_required"), col("p_required"))
-        .groupBy("v")
-        .agg(sum(when(col("p_field").isNull, 1L).otherwise(0L)).as("added"),
-          sum(when(col("c_field").isNull, 1L).otherwise(0L)).as("dropped"),
-          sum(when(col("p_field").isNull && col("c_required"), 1L)
-            .otherwise(0L)).as("added_required"),
-          sum(when(col("c_field").isNull && col("p_required"), 1L)
-            .otherwise(0L)).as("dropped_required"),
-          count(lit(1)).as("fields_compared"))
-        .withColumn("backward_compatible", col("added_required") === 0L)
-        .withColumn("forward_compatible", col("dropped_required") === 0L)
-        .withColumn("full_compatible",
-          col("backward_compatible") && col("forward_compatible"))
-        .orderBy("v")
-    }),
-
-    // Conformed-dimension drift audit — two marts carry "the same"
-    // customer dimension; the replica drifted (planted: a stale segment
-    // sync on custkey ≡ 5 mod 13, an off-by-a-cent balance on ≡ 2 mod
-    // 17). The audit joins the replicas 1:1 on the key (co-partitioned
-    // shuffle — the natural layout when both marts bucket by key) and
-    // censuses per segment: keys compared, per-attribute mismatches,
-    // any-drift count + ppm, and the highest drifted key (the incident
-    // cursor a repair job resumes from). join_survivorship_merge PICKS a
-    // winner; this op is the DETECTION side.
-    "warehouse_dim_drift" -> ((s, d) => {
-      val a = Tables.customer(s, d).select(col("c_custkey"),
-        col("c_mktsegment"), expr("CAST(FLOOR(c_acctbal * 100) AS BIGINT)").as("cents"))
-      val b = a.select(col("c_custkey"),
-        when(col("c_custkey") % 13 === 5, lower(col("c_mktsegment")))
-          .otherwise(col("c_mktsegment")).as("b_seg"),
-        (col("cents") + when(col("c_custkey") % 17 === 2, 1L).otherwise(0L))
-          .as("b_cents"))
-      a.join(b, Seq("c_custkey"))
-        .withColumn("seg_drift", (col("c_mktsegment") =!= col("b_seg")).cast("long"))
-        .withColumn("bal_drift", (col("cents") =!= col("b_cents")).cast("long"))
-        .withColumn("any_drift",
-          greatest(col("seg_drift"), col("bal_drift")))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_keys"),
-          sum("seg_drift").as("segment_mismatches"),
-          sum("bal_drift").as("balance_mismatches"),
-          sum("any_drift").as("drifted_keys"),
-          max(when(col("any_drift") === 1L, col("c_custkey"))).as("max_drifted_key"))
-        .withColumn("drift_ppm", expr("(drifted_keys * 1000000) DIV n_keys"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // Prefix-cache hit telemetry — the serving-cost lever vLLM-class
-    // engines report: requests share system prompts (doc_id mod 7 picks
-    // one of seven), so every prompt with an already-seen (source,
-    // system-prompt) prefix re-uses the cached KV block. Hits = prompts
-    // minus distinct prefixes per source; tokens saved = hits × the
-    // 16-char ≈ 4-token prefix. One rollup over the request log — the
-    // llm_kv_cache_plan sibling that grades REUSE, not residency.
-    "llm_prefix_cache_hits" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"))
-        .withColumn("sys_prompt", concat(lit("sys-"),
-          (col("doc_id") % 7).cast("string")))
-        .groupBy("source", "sys_prompt")
-        .agg(count(lit(1)).as("prompts"))
-        .groupBy("source")
-        .agg(sum("prompts").as("n_prompts"),
-          count(lit(1)).as("distinct_prefixes"),
-          sum(col("prompts") - 1).as("cache_hits"),
-          max("prompts").as("hottest_prefix"))
-        .withColumn("hit_ppm", expr("(cache_hits * 1000000) DIV n_prompts"))
-        .withColumn("tokens_saved", col("cache_hits") * 4L)
-        .orderBy("source")
-    }),
-
-    // Priority load shedding — the overload policy between the rate
-    // limiter (service_rate_limit_sliding) and the breaker
-    // (service_circuit_breaker): each (user, day) cell holds a 2-request
-    // budget and requests are admitted STRICTLY by priority class
-    // (purchase > signup > error > click > view), ties broken on the
-    // (ts_us, event_id) total order; everything past the budget sheds.
-    // Cell population scales with per-principal traffic, so the rank
-    // window never sees more than one principal-day. Graded per class:
-    // requests, shed, shed ppm — the strict-priority invariant is that
-    // senior classes shed at most as hard as junior ones.
-    "service_load_shedding" -> ((s, d) => {
-      val wCell = Window.partitionBy("user_id", "day")
-        .orderBy("priority", "ts_us", "event_id")
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-        .withColumn("day", expr("ts_us DIV 86400000000"))
-        .withColumn("priority",
-          when(col("event_type") === "purchase", 0)
-            .when(col("event_type") === "signup", 1)
-            .when(col("event_type") === "error", 2)
-            .when(col("event_type") === "click", 3).otherwise(4))
-        .withColumn("shed",
-          when(row_number().over(wCell) > 2, 1L).otherwise(0L))
-        .groupBy("priority")
-        .agg(count(lit(1)).as("n_requests"), sum("shed").as("n_shed"))
-        .withColumn("kept", col("n_requests") - col("n_shed"))
-        .withColumn("shed_ppm", expr("(n_shed * 1000000) DIV n_requests"))
-        .orderBy("priority")
-    }),
-
-    // Annotator qualification by gold seeding — the labeling-ops gate
-    // every human-data pipeline runs: every 5th item is a GOLD with a
-    // known answer; good annotators (id % 3 ≠ 0) answer golds correctly
-    // 9 times in 10, bad ones answer md5-noise (~25% right), and only
-    // annotators at ≥ 70% gold accuracy keep their production labels.
-    // Per annotator cohort: annotators, qualified, gold census, and the
-    // production-label mass retained vs discarded — the cost of the
-    // quality bar. Per-annotator rollup then cohort rollup, one scan.
-    "llm_annotator_qualification" -> ((s, d) => {
-      val tasks = Tables.events(s, d)
-        .select(col("event_id"), (col("event_id") % 24).as("annotator"))
-        .withColumn("is_gold", col("event_id") % 5 === 0)
-        .withColumn("gold_answer", expr(
-          s"${md5Bits("gold", "event_id", 6)} % 4"))
-        .withColumn("answer",
-          when(col("is_gold") && col("annotator") % 3 =!= 0 &&
-            col("event_id") % 50 =!= 45, col("gold_answer"))
-            .otherwise(expr(
-              s"${md5Bits("ans", "event_id", 6)} % 4")))
-      val perAnnotator = tasks.groupBy("annotator")
-        .agg(sum(when(col("is_gold"), 1L).otherwise(0L)).as("golds"),
-          sum(when(col("is_gold") && col("answer") === col("gold_answer"), 1L)
-            .otherwise(0L)).as("gold_correct"),
-          sum(when(!col("is_gold"), 1L).otherwise(0L)).as("prod_labels"))
-        .withColumn("qualified",
-          col("gold_correct") * 10L >= col("golds") * 7L)
-      perAnnotator.groupBy((col("annotator") % 8).as("cohort"))
-        .agg(count(lit(1)).as("n_annotators"),
-          sum(when(col("qualified"), 1L).otherwise(0L)).as("n_qualified"),
-          sum("golds").as("gold_tasks"),
-          sum("gold_correct").as("gold_correct"),
-          sum("prod_labels").as("labels_total"),
-          sum(when(col("qualified"), col("prod_labels")).otherwise(0L))
-            .as("labels_retained"))
-        .withColumn("retention_ppm",
-          expr("(labels_retained * 1000000) DIV labels_total"))
-        .orderBy("cohort")
-    }),
-
-    // Conversion-lag cohorts — the signup→first-purchase funnel timing
-    // (agg_funnel counts stage mass; this op grades the LAG): per user
-    // the first signup, then the first purchase strictly after it, lag
-    // in exact whole hours; cohorted by signup week: signed, converted,
-    // conversion ppm, min/max lag and total lag mass (the inputs every
-    // activation dashboard plots). Two conditional rollups + one join —
-    // no window over the raw log.
-    "agg_conversion_lag" -> ((s, d) => {
-      val ev = Tables.events(s, d)
-      val signup = ev.where(col("event_type") === "signup")
-        .groupBy("user_id").agg(min("ts_us").as("s_ts"))
-      val conv = ev.where(col("event_type") === "purchase")
-        .join(signup, Seq("user_id"))
-        .where(col("ts_us") > col("s_ts"))
-        .groupBy("user_id").agg(min("ts_us").as("p_ts"), min("s_ts").as("s_ts2"))
-        .withColumn("lag_hours", expr("(p_ts - s_ts2) DIV 3600000000"))
-      signup.join(conv.select("user_id", "lag_hours"), Seq("user_id"), "left")
-        .groupBy(expr("s_ts DIV 604800000000").as("cohort_week"))
-        .agg(count(lit(1)).as("signed_up"),
-          sum(when(col("lag_hours").isNotNull, 1L).otherwise(0L)).as("converted"),
-          min("lag_hours").as("min_lag_hours"),
-          max("lag_hours").as("max_lag_hours"),
-          sum(coalesce(col("lag_hours"), lit(0L))).as("lag_hours_mass"))
-        .withColumn("conversion_ppm",
-          expr("(converted * 1000000) DIV signed_up"))
-        .orderBy("cohort_week")
-    })
-  )
-
-  /** DuckDB twin of [[mrzCd]] — identical 7-3-1 fold in list form. */
-  private def mrzCdSql(field: String): String =
-    s"""CAST(list_sum(list_transform(range(1, 10), i ->
-       |  (CASE WHEN substring($field, i, 1) = '<' THEN 0
-       |        WHEN substring($field, i, 1) BETWEEN '0' AND '9'
-       |          THEN ascii(substring($field, i, 1)) - 48
-       |        ELSE ascii(substring($field, i, 1)) - 55 END)
-       |  * ([7, 3, 1])[((i - 1) % 3) + 1])) AS BIGINT) % 10""".stripMargin
-
-  val oracles: Map[String, String] = unique(
-    "agg_bradley_terry" ->
+    },
       """WITH bt AS (
         |  SELECT user_id % 6 AS a, (user_id // 7) % 6 AS b, event_id
         |  FROM events WHERE user_id % 6 <> (user_id // 7) % 6),
@@ -905,9 +116,37 @@ object Round13bOps extends Family {
         |SELECT base.m AS model, battles, wins, p AS strength_ppm,
         |  CAST(ROW_NUMBER() OVER (ORDER BY p DESC, base.m) AS INT) AS rank
         |FROM base JOIN p2 ON base.m = p2.m
-        |ORDER BY model""".stripMargin,
+        |ORDER BY model""".stripMargin),
 
-    "service_idempotency_replay" ->
+    // Idempotency-key replay audit — the at-most-once bookkeeping every
+    // payment/request API runs: clients retry with the SAME idempotency
+    // key (planted: event ids ≡ 3,4,5 mod 7 share the key of the ≡3 id —
+    // triple-attempt keys at a known 1-in-7 key rate), the service must
+    // census the replay tax. Per principal: attempts vs distinct keys,
+    // replayed keys, the wasted-attempt mass, worst attempt fan-out and
+    // the widest first→last replay window (the dedup-cache TTL this
+    // measures). Two shuffles (key rollup, then principal rollup) at any
+    // scale; the window math is exact µs integers.
+    Op("service_idempotency_replay", (s, d) => {
+      Tables.events(s, d)
+        .select(col("event_id"), col("ts_us"))
+        .withColumn("idem_key", col("event_id") -
+          when(col("event_id") % 7 === 4, 1L)
+            .when(col("event_id") % 7 === 5, 2L).otherwise(0L))
+        .groupBy("idem_key")
+        .agg(count(lit(1)).as("attempts"),
+          (max("ts_us") - min("ts_us")).as("span_us"))
+        .groupBy((col("idem_key") % 8).as("principal"))
+        .agg(sum("attempts").as("n_attempts"),
+          count(lit(1)).as("n_keys"),
+          sum(when(col("attempts") >= 2, 1L).otherwise(0L)).as("n_replayed"),
+          max("attempts").as("max_attempts"),
+          max("span_us").as("max_replay_window_us"))
+        .withColumn("wasted_attempts", col("n_attempts") - col("n_keys"))
+        .withColumn("replay_ppm",
+          expr("(n_replayed * 1000000) DIV n_keys"))
+        .orderBy("principal")
+    },
       """WITH k AS (
         |  SELECT event_id -
         |    CASE WHEN event_id % 7 = 4 THEN 1
@@ -924,9 +163,44 @@ object Round13bOps extends Family {
         |  CAST(SUM(attempts) - COUNT(*) AS BIGINT) AS wasted_attempts,
         |  (CAST(SUM(CASE WHEN attempts >= 2 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS replay_ppm
-        |FROM k GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM k GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "fn_mrz_check" -> {
+    // Passport MRZ check-digit validation (ICAO 9303) — the identity-
+    // document gate a person service runs at onboarding: the 9-char
+    // document number's check digit is the 7-3-1 weighted sum mod 10
+    // over the 0-9/A-Z/< value alphabet. Issuance computes the digit
+    // from the true number; presentation corrupts one char for every
+    // custkey ≡ 7 mod 11 (a +1 alphabet shift at position 5, weight 3 —
+    // provably never check-neutral since 3·δ ≢ 0 mod 10 for δ ∈
+    // {1,-9,-5}); validation recomputes from the PRESENTED chars. The
+    // per-row work is a constant 9-step fold (codegen'd higher-order
+    // aggregate, no UDF); census per market segment: documents, failed
+    // checks (exactly the planted corruption class), failure ppm, and
+    // the carried-digit sum as a checksum-of-checksums.
+    Op("fn_mrz_check", (s, d) => {
+      Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_mktsegment"))
+        .withColumn("doc_no",
+          upper(expr("substring(md5(CAST(c_custkey AS STRING)), 1, 9)")))
+        .withColumn("carried_cd", expr(mrzCd("doc_no")))
+        .withColumn("presented",
+          when(col("c_custkey") % 11 === 7,
+            expr("""concat(substring(doc_no, 1, 4),
+                   |  CASE WHEN substring(doc_no, 5, 1) = '9' THEN '0'
+                   |       WHEN substring(doc_no, 5, 1) = 'F' THEN 'A'
+                   |       ELSE chr(ascii(substring(doc_no, 5, 1)) + 1) END,
+                   |  substring(doc_no, 6, 4))""".stripMargin))
+            .otherwise(col("doc_no")))
+        .withColumn("recomputed_cd", expr(mrzCd("presented")))
+        .withColumn("valid", col("recomputed_cd") === col("carried_cd"))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(!col("valid"), 1L).otherwise(0L)).as("n_failed"),
+          sum("carried_cd").as("carried_cd_sum"))
+        .withColumn("fail_ppm", expr("(n_failed * 1000000) DIV n_docs"))
+        .orderBy("c_mktsegment")
+    },
+      {
       val carried = mrzCdSql("doc_no")
       val recomputed = mrzCdSql("presented")
       s"""WITH docs AS (
@@ -953,9 +227,43 @@ object Round13bOps extends Family {
          |  (CAST(SUM(CASE WHEN NOT valid THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
          |    // CAST(COUNT(*) AS BIGINT) AS fail_ppm
          |FROM v GROUP BY 1 ORDER BY c_mktsegment""".stripMargin
-    },
+    }),
 
-    "agg_psi_stability" ->
+    // Population Stability Index — the model-monitoring drift gate (the
+    // score-distribution sibling of agg_ks_drift): baseline vs current
+    // populations split by user parity, a planted +80 score shift on two
+    // event types in the current half (two full bins of drift — the
+    // undrifted types stay near zero). PSI = Σ (p_c − p_b)·ln(p_c/p_b)
+    // over 10 equal-width bins, each bin's term rounded to integer
+    // micro-units BEFORE the sum (association-order free, the
+    // agg_entropy exactness law); bins empty on either side are skipped
+    // under the same rule in both engines and censused. Every term is
+    // mathematically ≥ 0, so the sum is a true divergence. One shuffle
+    // to the (type, bin) grid, then a bounded window + rollup.
+    Op("agg_psi_stability", (s, d) => {
+      Tables.events(s, d)
+        .select(col("event_type"), (col("user_id") % 2).as("period"),
+          (col("value") + when(col("user_id") % 2 === 1 &&
+            col("event_type").isin("error", "purchase"), 80.0)
+            .otherwise(0.0)).as("score"))
+        .withColumn("bin", least(floor(col("score") / 40).cast("int"), lit(9)))
+        .groupBy("event_type", "bin")
+        .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("b"),
+          sum(when(col("period") === 1, 1L).otherwise(0L)).as("c"))
+        .withColumn("bt", sum("b").over(Window.partitionBy("event_type")))
+        .withColumn("ct", sum("c").over(Window.partitionBy("event_type")))
+        .withColumn("term_micro",
+          when(col("b") > 0 && col("c") > 0, expr(
+            """CAST(round((CAST(c AS DOUBLE) / ct - CAST(b AS DOUBLE) / bt)
+              |  * ln((CAST(c AS DOUBLE) * bt) / (CAST(b AS DOUBLE) * ct)) * 1000000) AS BIGINT)"""
+              .stripMargin)).otherwise(lit(0L)))
+        .groupBy("event_type")
+        .agg(max("bt").as("base_n"), max("ct").as("cur_n"),
+          sum(when(col("b") > 0 && col("c") > 0, 1L).otherwise(0L)).as("bins_used"),
+          sum("term_micro").as("psi_micro"))
+        .withColumn("drift", col("psi_micro") >= 200000L)
+        .orderBy("event_type")
+    },
       """WITH sc AS (
         |  SELECT event_type, user_id % 2 AS period,
         |    value + CASE WHEN user_id % 2 = 1
@@ -985,9 +293,45 @@ object Round13bOps extends Family {
         |  CAST(SUM(used) AS BIGINT) AS bins_used,
         |  CAST(SUM(term_micro) AS BIGINT) AS psi_micro,
         |  CAST(SUM(term_micro) AS BIGINT) >= 200000 AS drift
-        |FROM terms GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |FROM terms GROUP BY 1 ORDER BY event_type""".stripMargin),
 
-    "service_circuit_breaker" ->
+    // Circuit breaker — the request-indexed failure guard (time-window
+    // breakers starve on sparse traffic; production breakers count the
+    // trailing N calls): per service the last-20-requests failure count
+    // in the (ts_us, event_id) total order, OPEN at ≥ 8/20. Failures =
+    // error events plus planted dependency-outage blocks (every 13th
+    // 50-event id block fails wholesale — dense runs that provably trip
+    // the breaker at any scale). Trip episodes = gaps-and-islands over
+    // the open flag; census per service: requests, open requests, trips,
+    // longest open run, worst window pressure. Two stacked windows + two
+    // rollups, all partitioned by service — no global sort at any scale.
+    Op("service_circuit_breaker", (s, d) => {
+      val w20 = Window.partitionBy("service").orderBy("ts_us", "event_id")
+        .rowsBetween(-19, 0)
+      val wSeq = Window.partitionBy("service").orderBy("ts_us", "event_id")
+      val wOpen = Window.partitionBy("service", "open").orderBy("ts_us", "event_id")
+      val flagged = Tables.events(s, d)
+        .select((col("user_id") % 4).as("service"), col("event_id"),
+          col("ts_us"), col("event_type"))
+        .withColumn("fail", when(col("event_type") === "error" ||
+          expr("event_id DIV 50") % 13 === 7, 1L).otherwise(0L))
+        .withColumn("werr", sum("fail").over(w20))
+        .withColumn("open", (col("werr") >= 8L).cast("int"))
+        .withColumn("island",
+          row_number().over(wSeq) - row_number().over(wOpen))
+      val runs = flagged.where(col("open") === 1)
+        .groupBy("service", "island")
+        .agg(count(lit(1)).as("run_len"))
+        .groupBy("service")
+        .agg(count(lit(1)).as("n_trips"), max("run_len").as("longest_open_run"))
+      flagged.groupBy("service")
+        .agg(count(lit(1)).as("n_requests"),
+          sum("open").as("open_requests"),
+          max("werr").as("max_window_fails"))
+        .join(runs, Seq("service"), "left")
+        .na.fill(0L, Seq("n_trips", "longest_open_run"))
+        .orderBy("service")
+    },
       """WITH ev AS (
         |  SELECT user_id % 4 AS service, event_id, epoch_us(ts) AS ts_us,
         |    CASE WHEN event_type = 'error'
@@ -1019,9 +363,43 @@ object Round13bOps extends Family {
         |  COALESCE(MAX(r.n_trips), 0) AS n_trips,
         |  COALESCE(MAX(r.longest_open_run), 0) AS longest_open_run
         |FROM o LEFT JOIN r ON o.service = r.service
-        |GROUP BY 1 ORDER BY o.service""".stripMargin,
+        |GROUP BY 1 ORDER BY o.service""".stripMargin),
 
-    "llm_rag_budget_pack" ->
+    // RAG context packing under a token budget — the inference-side
+    // sibling of llm_concat_packing (which packs TRAINING sequences):
+    // per query, candidate passages ranked by relevance, greedily packed
+    // in rank order until the 256-token context budget closes. The
+    // fixture's 64 queries × md5 relevance (top-10% filter) stand in for
+    // an ANN candidate stage — the broadcast cross join SCORES 64× the doc
+    // mass (that is the evaluated volume); the score≥900 filter then prunes
+    // the surviving candidates to a fixed 6.4× before the window. Both are
+    // linear in corpus size; the pack itself is one per-query
+    // running sum (never a knapsack solve — rank-greedy is what serving
+    // stacks run). Census per query bucket: packed passages, packed
+    // tokens, boundary casualties (the first passage that no longer
+    // fit), budget utilization ppm.
+    Op("llm_rag_budget_pack", (s, d) => {
+      val q = s.range(64).select(col("id").as("q"))
+      val wPack = Window.partitionBy("q")
+        .orderBy(col("score").desc, col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
+        .crossJoin(broadcast(q))
+        .withColumn("score", expr(
+          s"${md5Bits("concat(CAST(q AS STRING), ':', CAST(doc_id AS STRING))", 6)} % 1000"))
+        .where(col("score") >= 900)
+        .withColumn("tok", expr("n_chars DIV 4"))
+        .withColumn("cumtok", sum("tok").over(wPack))
+        .groupBy((col("q") % 8).as("q_bucket"))
+        .agg(countDistinct("q").as("n_queries"),
+          sum(when(col("cumtok") <= 256, 1L).otherwise(0L)).as("n_packed"),
+          sum(when(col("cumtok") <= 256, col("tok")).otherwise(0L)).as("packed_tokens"),
+          sum(when(col("cumtok") > 256 && col("cumtok") - col("tok") <= 256, 1L)
+            .otherwise(0L)).as("boundary_dropped"))
+        .withColumn("util_ppm",
+          expr("(packed_tokens * 1000000) DIV (n_queries * 256)"))
+        .orderBy("q_bucket")
+    },
       s"""WITH cand AS (
         |  SELECT t.q, d.doc_id, d.n_chars // 4 AS tok,
         |    ${duckMd5Bits("CAST(t.q AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)", 6)} % 1000 AS score
@@ -1038,9 +416,39 @@ object Round13bOps extends Family {
         |  CAST(SUM(CASE WHEN cumtok > 256 AND cumtok - tok <= 256 THEN 1 ELSE 0 END) AS BIGINT) AS boundary_dropped,
         |  (CAST(SUM(CASE WHEN cumtok <= 256 THEN tok ELSE 0 END) AS BIGINT) * 1000000)
         |    // (CAST(COUNT(DISTINCT q) AS BIGINT) * 256) AS util_ppm
-        |FROM packed GROUP BY 1 ORDER BY q_bucket""".stripMargin,
+        |FROM packed GROUP BY 1 ORDER BY q_bucket""".stripMargin),
 
-    "service_retry_storm" ->
+    // Retry-storm / backoff-discipline audit — the client-behavior twin
+    // of service_idempotency_replay (which counts replays; this one
+    // judges their TIMING): the request log viewed as 4-attempt retry
+    // chains, inter-attempt gaps from the (ts_us, event_id) total order,
+    // a chain VIOLATES exponential-backoff discipline when any later gap
+    // shrinks below its predecessor (the thundering-herd signature an
+    // SRE pages on). Per service: chains, attempts, amplification ppm,
+    // violating chains + ppm, and the tightest observed retry gap (the
+    // µs burst floor). Two stacked lags inside one chain window + two
+    // rollups; everything partitioned by chain then service.
+    Op("service_retry_storm", (s, d) => {
+      val wc = Window.partitionBy("chain").orderBy("ts_us", "event_id")
+      val chains = Tables.events(s, d)
+        .select(col("event_id"), col("ts_us"))
+        .withColumn("chain", expr("event_id DIV 4"))
+        .withColumn("gap", col("ts_us") - lag("ts_us", 1).over(wc))
+        .withColumn("shrunk",
+          when(col("gap") < lag("gap", 1).over(wc), 1L).otherwise(0L))
+        .groupBy("chain")
+        .agg(count(lit(1)).as("attempts"), max("shrunk").as("viol"),
+          min("gap").as("min_gap"))
+      chains.groupBy((col("chain") % 4).as("service"))
+        .agg(count(lit(1)).as("n_chains"), sum("attempts").as("n_attempts"),
+          sum("viol").as("violating_chains"),
+          min("min_gap").as("min_gap_us"))
+        .withColumn("amplification_ppm",
+          expr("(n_attempts * 1000000) DIV n_chains"))
+        .withColumn("violation_ppm",
+          expr("(violating_chains * 1000000) DIV n_chains"))
+        .orderBy("service")
+    },
       """WITH g AS (
         |  SELECT event_id // 4 AS chain, event_id, epoch_us(ts) AS ts_us,
         |    epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap
@@ -1063,9 +471,39 @@ object Round13bOps extends Family {
         |  CAST(MIN(min_gap) AS BIGINT) AS min_gap_us,
         |  (CAST(SUM(attempts) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT) AS amplification_ppm,
         |  (CAST(SUM(viol) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT) AS violation_ppm
-        |FROM c GROUP BY 1 ORDER BY service""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY service""".stripMargin),
 
-    "llm_wer_eval" ->
+    // Word-error-rate eval by token fingerprinting — mm_asr_cer_eval's
+    // word-level sibling: the reference's first 12 words are ENCODED one
+    // char per word (md5 fingerprint → A-Z; collisions are the declared
+    // approximation both engines share bit-for-bit), so word-level edit
+    // distance reduces to the same constant-bounded Levenshtein DP the
+    // CER op runs — a 12² ceiling per row, linear in docs at any scale.
+    // Hypothesis corruptions per class: every 3rd word dropped (regex
+    // group surgery on the encoding), leading word swap, clean. Graded
+    // per (source, class): docs, WER-ppm mass, worst WER.
+    Op("llm_wer_eval", (s, d) => {
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source"),
+          expr(s"""array_join(transform(slice(split(text, ' '), 1, 12),
+                 |  w -> chr(65 + ${md5Bits("w", 4)} % 26)), '')""".stripMargin).as("enc"),
+          expr("least(size(split(text, ' ')), 12)").as("n_words"))
+        .withColumn("class",
+          when(col("doc_id") % 3 === 0, lit("drop3"))
+            .when(col("doc_id") % 3 === 1, lit("swap")).otherwise(lit("clean")))
+        .withColumn("hyp",
+          when(col("class") === "drop3",
+            regexp_replace(col("enc"), "(..).", "$1"))
+            .when(col("class") === "swap" && length(col("enc")) >= 2,
+              expr("concat(substring(enc, 2, 1), substring(enc, 1, 1), substring(enc, 3))"))
+            .otherwise(col("enc")))
+        .withColumn("wer_ppm", expr(
+          "(levenshtein(enc, hyp) * CAST(1000000 AS BIGINT)) DIV n_words"))
+        .groupBy("source", "class")
+        .agg(count(lit(1)).as("n_docs"), sum("wer_ppm").as("wer_ppm_mass"),
+          max("wer_ppm").as("worst_wer_ppm"))
+        .orderBy("source", "class")
+    },
       raw"""WITH e AS (
         |  SELECT doc_id, source,
         |    array_to_string(list_transform(str_split(text, ' ')[1:12],
@@ -1085,9 +523,37 @@ object Round13bOps extends Family {
         |SELECT source, class, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM((levenshtein(enc, hyp) * CAST(1000000 AS BIGINT)) // n_words) AS BIGINT) AS wer_ppm_mass,
         |  CAST(MAX((levenshtein(enc, hyp) * CAST(1000000 AS BIGINT)) // n_words) AS BIGINT) AS worst_wer_ppm
-        |FROM h GROUP BY 1, 2 ORDER BY source, class""".stripMargin,
+        |FROM h GROUP BY 1, 2 ORDER BY source, class""".stripMargin),
 
-    "warehouse_pseudonym_consistent" ->
+    // Stable keyed pseudonymization — the GDPR-grade tokenization every
+    // person warehouse ships (warehouse_masked_view hides columns; this
+    // op REPLACES the join key and must prove referential integrity
+    // survives): pseudo = keyed md5 prefix of the customer key, applied
+    // independently to the customer dim and the orders fact, then the
+    // fact re-joined to the dim ON THE PSEUDONYM. Graded per segment:
+    // customers vs distinct pseudonyms and the max keys-per-pseudonym
+    // (the collision census — 48 bits keeps it 1:1 at any graded scale),
+    // plus the order count and cents mass that survive the pseudonym
+    // join. One shuffle join on the pseudonym + two rollups.
+    Op("warehouse_pseudonym_consistent", (s, d) => {
+      def pseudo(key: String) = expr(
+        s"upper(substring(md5(concat('pepper2024:', CAST($key AS STRING))), 1, 12))")
+      val cust = Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_mktsegment"), pseudo("c_custkey").as("pseudo"))
+      val perPseudo = cust.groupBy("c_mktsegment", "pseudo")
+        .agg(count(lit(1)).as("keys"))
+        .groupBy("c_mktsegment")
+        .agg(sum("keys").as("n_customers"), count(lit(1)).as("n_pseudonyms"),
+          max("keys").as("max_keys_per_pseudo"))
+      val ordSide = Tables.orders(s, d)
+        .select(pseudo("o_custkey").as("pseudo"), col("o_totalprice"))
+        .join(cust.select("pseudo", "c_mktsegment"), Seq("pseudo"))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("order_cents"))
+      perPseudo.join(ordSide, Seq("c_mktsegment"))
+        .orderBy("c_mktsegment")
+    },
       """WITH cust AS (
         |  SELECT c_custkey, c_mktsegment,
         |    upper(substring(md5('pepper2024:' || CAST(c_custkey AS VARCHAR)), 1, 12)) AS pseudo
@@ -1110,9 +576,42 @@ object Round13bOps extends Family {
         |SELECT dim.c_mktsegment, n_customers, n_pseudonyms, max_keys_per_pseudo,
         |  n_orders, order_cents
         |FROM dim JOIN fact ON dim.c_mktsegment = fact.c_mktsegment
-        |ORDER BY dim.c_mktsegment""".stripMargin,
+        |ORDER BY dim.c_mktsegment""".stripMargin),
 
-    "service_impossible_travel" ->
+    // Impossible-travel detection — the account-takeover heuristic every
+    // person-service security team runs: each login resolves to a city
+    // grid cell (home cell per user; planted md5 trips relocate every
+    // 17th event), consecutive logins per user in the (ts_us, event_id)
+    // total order yield a Chebyshev grid distance and an EXACT integer
+    // speed (units·3600e6 DIV Δµs — no haversine floats to drift), a
+    // transition is IMPOSSIBLE above 900 units/h. Per principal bucket:
+    // transitions, relocations, impossible count + ppm, worst observed
+    // speed. One user-partitioned lag window + one rollup.
+    Op("service_impossible_travel", (s, d) => {
+      val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"))
+        .withColumn("city",
+          when(col("event_id") % 17 === 3, col("event_id") % 20)
+            .otherwise(col("user_id") % 20))
+        .withColumn("x", (col("city") % 5) * 1000)
+        .withColumn("y", expr("city DIV 5") * 1000)
+        .withColumn("dist", greatest(
+          abs(col("x") - lag("x", 1).over(wu)),
+          abs(col("y") - lag("y", 1).over(wu))))
+        .withColumn("dt_us",
+          greatest(col("ts_us") - lag("ts_us", 1).over(wu), lit(1L)))
+        .withColumn("speed", expr("(dist * 3600000000) DIV dt_us"))
+        .where(col("dist").isNotNull)
+        .groupBy((col("user_id") % 8).as("principal"))
+        .agg(count(lit(1)).as("n_transitions"),
+          sum(when(col("dist") > 0, 1L).otherwise(0L)).as("n_moves"),
+          sum(when(col("speed") > 900L, 1L).otherwise(0L)).as("n_impossible"),
+          max("speed").as("max_speed"))
+        .withColumn("impossible_ppm",
+          expr("(n_impossible * 1000000) DIV n_transitions"))
+        .orderBy("principal")
+    },
       """WITH loc AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CASE WHEN event_id % 17 = 3 THEN event_id % 20
@@ -1137,9 +636,48 @@ object Round13bOps extends Family {
         |  CAST(MAX(speed) AS BIGINT) AS max_speed,
         |  (CAST(SUM(CASE WHEN speed > 900 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS impossible_ppm
-        |FROM sp GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM sp GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "mm_subtitle_align" ->
+    // Subtitle-to-speech alignment — the mm tier's interval-join QA: even
+    // events are SPEECH segments, odd events are subtitle CUES (duration
+    // = value·10⁴ µs, up to ~3.3 s), both per session (user). Candidate
+    // pairs are BLOCKED on the (user, start-hour) cell — the declared
+    // alignment window every subtitle QA tool uses; pairs straddling an
+    // hour boundary are out of scope by that rule in BOTH engines, and
+    // the cell population is bounded (traffic/hour), so the join is
+    // linear at any scale, never |cues|×|segments|. A cue is MATCHED if
+    // any segment overlaps it, ALIGNED if some segment covers ≥ half of
+    // it (exact integer µs overlap). Per principal bucket: cues, matched,
+    // aligned, orphans, total overlap mass.
+    Op("mm_subtitle_align", (s, d) => {
+      val ev = Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"),
+          expr("CAST(FLOOR(value * 10000) AS BIGINT)").as("dur_us"))
+        .withColumn("hour", expr("ts_us DIV 3600000000"))
+      val segs = ev.where(col("event_id") % 2 === 0)
+        .select(col("user_id"), col("hour"), col("ts_us").as("s_start"),
+          (col("ts_us") + col("dur_us")).as("s_end"))
+      val cues = ev.where(col("event_id") % 2 === 1)
+        .select(col("user_id"), col("hour"), col("event_id").as("cue_id"),
+          col("ts_us").as("c_start"), (col("ts_us") + col("dur_us")).as("c_end"))
+      val perCue = cues.join(segs, Seq("user_id", "hour"), "left")
+        .withColumn("overlap", greatest(
+          least(col("c_end"), col("s_end")) -
+            greatest(col("c_start"), col("s_start")), lit(0L)))
+        .groupBy(col("user_id"), col("cue_id"),
+          (col("c_end") - col("c_start")).as("c_dur"))
+        .agg(sum(when(col("overlap") > 0, 1L).otherwise(0L)).as("n_overlapping"),
+          max(coalesce(col("overlap"), lit(0L))).as("best_overlap"),
+          sum(coalesce(col("overlap"), lit(0L))).as("overlap_mass"))
+      perCue.groupBy((col("user_id") % 8).as("principal"))
+        .agg(count(lit(1)).as("n_cues"),
+          sum(when(col("n_overlapping") > 0, 1L).otherwise(0L)).as("matched_cues"),
+          sum(when(col("best_overlap") * 2 >= col("c_dur"), 1L).otherwise(0L))
+            .as("aligned_cues"),
+          sum(when(col("n_overlapping") === 0, 1L).otherwise(0L)).as("orphan_cues"),
+          sum("overlap_mass").as("overlap_mass_us"))
+        .orderBy("principal")
+    },
       """WITH ev AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    CAST(FLOOR(value * 10000) AS BIGINT) AS dur_us,
@@ -1169,9 +707,37 @@ object Round13bOps extends Family {
         |  CAST(SUM(CASE WHEN best_overlap * 2 >= c_dur THEN 1 ELSE 0 END) AS BIGINT) AS aligned_cues,
         |  CAST(SUM(CASE WHEN n_overlapping = 0 THEN 1 ELSE 0 END) AS BIGINT) AS orphan_cues,
         |  CAST(SUM(overlap_mass) AS BIGINT) AS overlap_mass_us
-        |FROM per_cue GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM per_cue GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "llm_crawl_frontier_plan" ->
+    // Crawl-frontier scheduling — the politeness-budgeted fetch plan a
+    // web-corpus pipeline runs upstream of everything else: URLs (docs)
+    // grouped by host (source × md5 shard), ranked inside each host by
+    // (priority desc, doc_id), and drained at ≤ 2 fetches per host per
+    // round (the crawl-delay law), so a URL's round = (host-rank−1) DIV 2.
+    // Per source: URLs, hosts, rounds-to-drain (frontier latency), the
+    // round-0 share — the scheduling telemetry that decides crawler
+    // capacity. One host-partitioned rank window + one rollup; hosts
+    // scale with the corpus so no partition ever exceeds its own host's
+    // URL count.
+    Op("llm_crawl_frontier_plan", (s, d) => {
+      val wh = Window.partitionBy("host").orderBy(col("prio").desc, col("doc_id"))
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source"))
+        .withColumn("host", concat(col("source"), lit("-"),
+          (col("doc_id") % 50).cast("string")))
+        .withColumn("prio", expr(
+          s"${md5Bits("url", "doc_id", 6)} % 1000"))
+        .withColumn("rn", row_number().over(wh))
+        .withColumn("round", expr("(CAST(rn AS BIGINT) - 1) DIV 2"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_urls"),
+          countDistinct("host").as("n_hosts"),
+          (max("round") + 1).as("rounds_to_drain"),
+          sum(when(col("round") === 0, 1L).otherwise(0L)).as("round0_urls"))
+        .withColumn("round0_share_ppm",
+          expr("(round0_urls * 1000000) DIV n_urls"))
+        .orderBy("source")
+    },
       s"""WITH u AS (
         |  SELECT doc_id, source,
         |    source || '-' || CAST(doc_id % 50 AS VARCHAR) AS host,
@@ -1189,9 +755,48 @@ object Round13bOps extends Family {
         |  CAST(SUM(CASE WHEN round = 0 THEN 1 ELSE 0 END) AS BIGINT) AS round0_urls,
         |  (CAST(SUM(CASE WHEN round = 0 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS round0_share_ppm
-        |FROM r GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY source""".stripMargin),
 
-    "llm_moe_router_balance" ->
+    // MoE router load-balance audit — the expert-parallel training
+    // telemetry (a skewed router starves experts and blows the all-to-all
+    // step): tokens route top-2 over 16 experts per layer (md5 gates; the
+    // second choice re-indexed past the first so the pair is always
+    // distinct — the standard distinct-sampling trick). Per layer the
+    // exact integer balance factor n_experts·Σload² ·1e6 DIV (Σload)² —
+    // EXACTLY 1e6 when perfectly balanced, growing with skew (the L2
+    // imbalance every MoE paper reports), plus max-load ppm and the
+    // expert census. One shuffle to (layer, expert), bounded rollups.
+    Op("llm_moe_router_balance", (s, d) => {
+      val routed = Tables.events(s, d)
+        .select(col("event_id"), (col("event_id") % 4).as("layer"))
+        .withColumn("e1", expr(
+          s"${md5Bits("e1", "event_id", 6)} % 16"))
+        .withColumn("e2r", expr(
+          s"${md5Bits("e2", "event_id", 6)} % 15"))
+        .withColumn("e2", when(col("e2r") >= col("e1"), col("e2r") + 1)
+          .otherwise(col("e2r")))
+      val loads = routed.select(col("layer"), col("e1").as("expert"))
+        .unionByName(routed.select(col("layer"), col("e2").as("expert")))
+        .groupBy("layer", "expert")
+        .agg(count(lit(1)).as("load"))
+      loads.groupBy("layer")
+        .agg(sum("load").as("n_assignments"),
+          count(lit(1)).as("experts_used"),
+          max("load").as("max_load"),
+          sum(col("load") * col("load")).as("l2"))
+        .select(col("layer"),
+          expr("n_assignments DIV 2").as("n_tokens"),
+          col("n_assignments"), col("experts_used"),
+          expr("(max_load * 1000000) DIV n_assignments").as("max_load_ppm"),
+          // DECIMAL(38,0) product chain: l2 ~ n^2/16, so 16*l2*1e6 overflows
+          // Long near ~3M assignments/layer — route through decimal exactly
+          // as service_composite_slo does (HUGEINT on the DuckDB side).
+          expr("""CAST((CAST(16 AS DECIMAL(38,0)) * l2 * 1000000)
+                 |  DIV (CAST(n_assignments AS DECIMAL(38,0)) * n_assignments)
+                 |  AS BIGINT)""".stripMargin)
+            .as("balance_factor_ppm"))
+        .orderBy("layer")
+    },
       s"""WITH g AS (
         |  SELECT event_id, event_id % 4 AS layer,
         |    ${duckMd5Bits("e1", "event_id", 6)} % 16 AS e1,
@@ -1215,9 +820,36 @@ object Round13bOps extends Family {
         |  (max_load * 1000000) // n_assignments AS max_load_ppm,
         |  CAST((CAST(16 AS HUGEINT) * l2 * 1000000)
         |    // (CAST(n_assignments AS HUGEINT) * n_assignments) AS BIGINT) AS balance_factor_ppm
-        |FROM agg ORDER BY layer""".stripMargin,
+        |FROM agg ORDER BY layer""".stripMargin),
 
-    "mm_frame_dedup_temporal" ->
+    // Temporal frame dedup — the video-preprocessing pass that drops
+    // near-identical consecutive frames BEFORE any decode/embedding cost:
+    // frames (events per session) carry a 60-bit perceptual hash that is
+    // stable within a 5-frame SHOT (planted: same md5 base XOR a ≤2-bit
+    // jitter; shots keyed by frame sequence, not wall-clock, so the plant
+    // holds at sparse and dense traffic alike) and random across shots; a
+    // frame is DROPPED when its Hamming distance to the PREDECESSOR is
+    // ≤ 4 (lag-1 greedy — the streaming-friendly rule, one window, no
+    // pairwise). bit_count(xor) is codegen'd in both engines. Per
+    // principal: frames, dropped, kept, drop ppm — the decode-cost
+    // saving this pass buys.
+    Op("mm_frame_dedup_temporal", (s, d) => {
+      val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"))
+        .withColumn("shot", expr("(CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS BIGINT) - 1) DIV 5"))
+        .withColumn("phash", expr(
+          md5Bits("concat('ph:', CAST(user_id AS STRING), ':', CAST(shot AS STRING))", 15))
+          .bitwiseXOR(col("event_id") % 3))
+        .withColumn("prev", lag("phash", 1).over(wu))
+        .withColumn("dropped", when(col("prev").isNotNull &&
+          bit_count(col("phash").bitwiseXOR(col("prev"))) <= 4, 1L).otherwise(0L))
+        .groupBy((col("user_id") % 8).as("principal"))
+        .agg(count(lit(1)).as("n_frames"), sum("dropped").as("n_dropped"))
+        .withColumn("n_kept", col("n_frames") - col("n_dropped"))
+        .withColumn("drop_ppm", expr("(n_dropped * 1000000) DIV n_frames"))
+        .orderBy("principal")
+    },
       s"""WITH sh AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    (CAST(ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1242,9 +874,37 @@ object Round13bOps extends Family {
         |  CAST(SUM(dropped) AS BIGINT) AS n_dropped,
         |  CAST(COUNT(*) - SUM(dropped) AS BIGINT) AS n_kept,
         |  (CAST(SUM(dropped) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT) AS drop_ppm
-        |FROM d GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM d GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "fn_semver_latest" ->
+    // Semantic-version ordering — the deployment-ledger gate that
+    // lexicographic MAX silently corrupts (v2.9.9 > v2.9.19 as strings):
+    // component versions rendered as strings, re-PARSED by anchored
+    // regexp_extract (the fn surface under test), latest picked by
+    // max_by on the exact numeric key, and the lexicographic answer
+    // carried beside it with a divergence flag — the proof the numeric
+    // path matters. One rollup per component.
+    Op("fn_semver_latest", (s, d) => {
+      Tables.orders(s, d)
+        .select((col("o_orderkey") % 12).as("component"),
+          concat(lit("v"), (col("o_orderkey") % 3).cast("string"), lit("."),
+            (expr("o_orderkey DIV 3") % 10).cast("string"), lit("."),
+            (expr("o_orderkey DIV 30") % 20).cast("string")).as("version"))
+        .withColumn("maj", regexp_extract(col("version"),
+          "^v(\\d+)\\.(\\d+)\\.(\\d+)$", 1).cast("bigint"))
+        .withColumn("min_", regexp_extract(col("version"),
+          "^v(\\d+)\\.(\\d+)\\.(\\d+)$", 2).cast("bigint"))
+        .withColumn("pat", regexp_extract(col("version"),
+          "^v(\\d+)\\.(\\d+)\\.(\\d+)$", 3).cast("bigint"))
+        .withColumn("numkey",
+          col("maj") * 1000000L + col("min_") * 1000L + col("pat"))
+        .groupBy("component")
+        .agg(count(lit(1)).as("n_versions"),
+          countDistinct("version").as("n_distinct_versions"),
+          expr("max_by(version, numkey)").as("latest_semver"),
+          max("version").as("lex_max"))
+        .withColumn("lex_wrong", col("latest_semver") =!= col("lex_max"))
+        .orderBy("component")
+    },
       """WITH v AS (
         |  SELECT o_orderkey % 12 AS component,
         |    'v' || CAST(o_orderkey % 3 AS VARCHAR) || '.' ||
@@ -1262,9 +922,41 @@ object Round13bOps extends Family {
         |  max_by(version, numkey) AS latest_semver,
         |  MAX(version) AS lex_max,
         |  max_by(version, numkey) <> MAX(version) AS lex_wrong
-        |FROM p GROUP BY 1 ORDER BY component""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY component""".stripMargin),
 
-    "warehouse_retention_legal_hold" ->
+    // Retention vs legal-hold conflict audit — the governance collision
+    // every DPO adjudicates: the TTL policy says DELETE (order older than
+    // the per-segment retention horizon, measured against the corpus
+    // high-water mark so the audit replays exactly), the litigation-hold
+    // ledger says KEEP (planted: every custkey ≡ 5 mod 23 is under
+    // hold). The sweep may only remove EXPIRED ∧ ¬HELD; conflicted rows
+    // (expired ∧ held) go to the review queue. Per segment: rows,
+    // expired, held, conflicts, deletable, and the deletable cents mass
+    // leaving the warehouse. Broadcast horizon + one rollup.
+    Op("warehouse_retention_legal_hold", (s, d) => {
+      val o = Tables.orders(s, d)
+      val hwm = o.agg(max("o_orderdate").as("hwm"))
+      o.select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
+        .join(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
+          col("o_custkey") === col("c_custkey"))
+        .crossJoin(broadcast(hwm))
+        .withColumn("horizon_days",
+          when(col("c_mktsegment").isin("BUILDING", "MACHINERY"), 365)
+            .otherwise(540))
+        .withColumn("expired",
+          datediff(col("hwm"), col("o_orderdate")) > col("horizon_days"))
+        .withColumn("held", col("o_custkey") % 23 === 5)
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_orders"),
+          sum(when(col("expired"), 1L).otherwise(0L)).as("n_expired"),
+          sum(when(col("held"), 1L).otherwise(0L)).as("n_held"),
+          sum(when(col("expired") && col("held"), 1L).otherwise(0L)).as("n_conflicts"),
+          sum(when(col("expired") && !col("held"), 1L).otherwise(0L)).as("n_deletable"),
+          sum(when(col("expired") && !col("held"),
+            expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).otherwise(0L))
+            .as("deletable_cents"))
+        .orderBy("c_mktsegment")
+    },
       """WITH hwm AS (SELECT MAX(o_orderdate) AS h FROM orders),
         |j AS (
         |  SELECT c_mktsegment, o_custkey, o_totalprice,
@@ -1281,9 +973,51 @@ object Round13bOps extends Family {
         |  CAST(SUM(CASE WHEN expired AND NOT held
         |    THEN CAST(FLOOR(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
         |    AS deletable_cents
-        |FROM j GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
+        |FROM j GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
 
-    "service_api_version_adoption" ->
+    // API version adoption / deprecation readiness — the service-owner
+    // dashboard before turning an endpoint off: calls carry an API
+    // version (md5-assigned: a 0.5% ancient v0 — under the 1% bar, so
+    // READY — and an 8% legacy v1 that is not), graded per (version,
+    // week): call share in exact ppm via the week-total broadcast, plus
+    // per version the last active week and the READY flag — share over
+    // the TRAILING 4 WEEKS < 1% (a single final week is too small a
+    // sample to turn an endpoint off on; the trailing window is the
+    // production rule). Two rollups + broadcast joins — no windows over
+    // the raw log.
+    Op("service_api_version_adoption", (s, d) => {
+      val calls = Tables.events(s, d)
+        .select(expr("ts_us DIV 604800000000").as("week"),
+          expr(s"""CASE WHEN ${md5Bits("ver", "event_id", 6)} % 1000 < 5
+                 |THEN 'v0'
+                 |WHEN ${md5Bits("ver", "event_id", 6)} % 1000 < 85
+                 |THEN 'v1' ELSE 'v2' END""".stripMargin).as("version"))
+      val perWeek = calls.groupBy("week", "version")
+        .agg(count(lit(1)).as("calls"))
+      val weekTot = perWeek.groupBy("week").agg(sum("calls").as("week_calls"))
+      val lastWeek = weekTot.agg(max("week").as("final_week"))
+      val trailTot = weekTot.crossJoin(broadcast(lastWeek))
+        .where(col("week") > col("final_week") - 4)
+        .agg(sum("week_calls").as("trail_total"))
+      perWeek.join(broadcast(weekTot), Seq("week"))
+        .withColumn("share_ppm", expr("(calls * 1000000) DIV week_calls"))
+        .crossJoin(broadcast(lastWeek))
+        .groupBy("version")
+        .agg(sum("calls").as("total_calls"),
+          count(lit(1)).as("active_weeks"),
+          max("week").as("last_active_week"),
+          expr("max_by(share_ppm, week)").as("final_week_share_ppm"),
+          sum(when(col("week") > col("final_week") - 4, col("calls"))
+            .otherwise(0L)).as("trailing4w_calls"))
+        .crossJoin(broadcast(trailTot))
+        .withColumn("trailing4w_share_ppm",
+          expr("(trailing4w_calls * 1000000) DIV trail_total"))
+        .withColumn("deprecation_ready", col("trailing4w_share_ppm") < 10000L)
+        .select("version", "total_calls", "active_weeks", "last_active_week",
+          "final_week_share_ppm", "trailing4w_calls", "trailing4w_share_ppm",
+          "deprecation_ready")
+        .orderBy("version")
+    },
       s"""WITH calls AS (
         |  SELECT epoch_us(ts) // 604800000000 AS week,
         |    CASE WHEN ${duckMd5Bits("ver", "event_id", 6)} % 1000 < 5 THEN 'v0'
@@ -1317,9 +1051,35 @@ object Round13bOps extends Family {
         |    AS trailing4w_share_ppm,
         |  (trailing4w_calls * 1000000) // (SELECT trail_total FROM tt) < 10000
         |    AS deprecation_ready
-        |FROM v ORDER BY version""".stripMargin,
+        |FROM v ORDER BY version""".stripMargin),
 
-    "llm_distill_agreement" ->
+    // Teacher–student distillation agreement — the eval gate before a
+    // distilled model ships: teacher labels from the embeddings table,
+    // student predictions planted to flip every vec_id ≡ 2 mod 9 to the
+    // next class (a known ~11% disagreement mass). Per teacher class:
+    // support, agreements, exact agreement ppm, and the dominant
+    // confusion target via max_by over the off-diagonal census — the
+    // per-class error anatomy a distillation run is judged on. Two
+    // bounded rollups after one scan.
+    Op("llm_distill_agreement", (s, d) => {
+      val k = 8 // embeddings.label classes are bounded; fold into 8
+      val preds = Tables.embeddings(s, d)
+        .select(col("vec_id"), (col("label") % k).as("teacher"))
+        .withColumn("student",
+          when(col("vec_id") % 9 === 2, (col("teacher") + 1) % k)
+            .otherwise(col("teacher")))
+      val confusion = preds.groupBy("teacher", "student")
+        .agg(count(lit(1)).as("n"))
+      confusion.groupBy("teacher")
+        .agg(sum("n").as("support"),
+          sum(when(col("student") === col("teacher"), col("n")).otherwise(0L))
+            .as("agreements"),
+          expr("max_by(student, CASE WHEN student = teacher THEN -1 ELSE n END)")
+            .as("top_confusion"))
+        .withColumn("agreement_ppm",
+          expr("(agreements * 1000000) DIV support"))
+        .orderBy("teacher")
+    },
       """WITH p AS (
         |  SELECT vec_id, label % 8 AS teacher,
         |    CASE WHEN vec_id % 9 = 2 THEN (label % 8 + 1) % 8
@@ -1333,9 +1093,48 @@ object Round13bOps extends Family {
         |  max_by(student, CASE WHEN student = teacher THEN -1 ELSE n END) AS top_confusion,
         |  (CAST(SUM(CASE WHEN student = teacher THEN n ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(SUM(n) AS BIGINT) AS agreement_ppm
-        |FROM conf GROUP BY 1 ORDER BY teacher""".stripMargin,
+        |FROM conf GROUP BY 1 ORDER BY teacher""".stripMargin),
 
-    "warehouse_schema_registry_compat" ->
+    // Schema-registry compatibility matrix — the evolution gate between
+    // consecutive schema versions (source_schema_evolution reads the
+    // DATA; this op grades the REGISTRY rules that decide whether a
+    // version may ship at all): 8 versions over a 15-field universe,
+    // each version widening by one field per two versions and dropping
+    // one planted field from v5 on; field i is REQUIRED iff i % 3 ≠ 0.
+    // BACKWARD compatible (new reader, old data) ⇔ nothing REQUIRED was
+    // added; FORWARD (old reader, new data) ⇔ nothing REQUIRED was
+    // dropped. Set-diffs via one full-outer join per consecutive pair —
+    // registry-scale metadata, the engine shape is the join grammar.
+    Op("warehouse_schema_registry_compat", (s, d) => {
+      val fields = s.range(8).select(col("id").as("version"))
+        .crossJoin(s.range(15).select(col("id").as("field")))
+        .where(col("field") < lit(10) + expr("version DIV 2") &&
+          !(col("field") === col("version") - 3 && col("version") >= 5))
+        .withColumn("required", col("field") % 3 =!= 0)
+      val prev = fields.select((col("version") + 1).as("version"),
+        col("field").as("p_field"), col("required").as("p_required"))
+      val cur = fields.select(col("version"), col("field").as("c_field"),
+        col("required").as("c_required"))
+      cur.join(prev, cur("version") === prev("version") &&
+          cur("c_field") === prev("p_field"), "full")
+        .where(coalesce(cur("version"), prev("version")).between(1, 7))
+        .select(coalesce(cur("version"), prev("version")).as("v"),
+          col("c_field"), col("p_field"),
+          col("c_required"), col("p_required"))
+        .groupBy("v")
+        .agg(sum(when(col("p_field").isNull, 1L).otherwise(0L)).as("added"),
+          sum(when(col("c_field").isNull, 1L).otherwise(0L)).as("dropped"),
+          sum(when(col("p_field").isNull && col("c_required"), 1L)
+            .otherwise(0L)).as("added_required"),
+          sum(when(col("c_field").isNull && col("p_required"), 1L)
+            .otherwise(0L)).as("dropped_required"),
+          count(lit(1)).as("fields_compared"))
+        .withColumn("backward_compatible", col("added_required") === 0L)
+        .withColumn("forward_compatible", col("dropped_required") === 0L)
+        .withColumn("full_compatible",
+          col("backward_compatible") && col("forward_compatible"))
+        .orderBy("v")
+    },
       """WITH f AS (
         |  SELECT v.range AS version, fl.range AS field,
         |    (fl.range % 3) <> 0 AS required
@@ -1364,9 +1163,39 @@ object Round13bOps extends Family {
         |  added_required = 0 AS backward_compatible,
         |  dropped_required = 0 AS forward_compatible,
         |  added_required = 0 AND dropped_required = 0 AS full_compatible
-        |FROM a ORDER BY v""".stripMargin,
+        |FROM a ORDER BY v""".stripMargin),
 
-    "warehouse_dim_drift" ->
+    // Conformed-dimension drift audit — two marts carry "the same"
+    // customer dimension; the replica drifted (planted: a stale segment
+    // sync on custkey ≡ 5 mod 13, an off-by-a-cent balance on ≡ 2 mod
+    // 17). The audit joins the replicas 1:1 on the key (co-partitioned
+    // shuffle — the natural layout when both marts bucket by key) and
+    // censuses per segment: keys compared, per-attribute mismatches,
+    // any-drift count + ppm, and the highest drifted key (the incident
+    // cursor a repair job resumes from). join_survivorship_merge PICKS a
+    // winner; this op is the DETECTION side.
+    Op("warehouse_dim_drift", (s, d) => {
+      val a = Tables.customer(s, d).select(col("c_custkey"),
+        col("c_mktsegment"), expr("CAST(FLOOR(c_acctbal * 100) AS BIGINT)").as("cents"))
+      val b = a.select(col("c_custkey"),
+        when(col("c_custkey") % 13 === 5, lower(col("c_mktsegment")))
+          .otherwise(col("c_mktsegment")).as("b_seg"),
+        (col("cents") + when(col("c_custkey") % 17 === 2, 1L).otherwise(0L))
+          .as("b_cents"))
+      a.join(b, Seq("c_custkey"))
+        .withColumn("seg_drift", (col("c_mktsegment") =!= col("b_seg")).cast("long"))
+        .withColumn("bal_drift", (col("cents") =!= col("b_cents")).cast("long"))
+        .withColumn("any_drift",
+          greatest(col("seg_drift"), col("bal_drift")))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_keys"),
+          sum("seg_drift").as("segment_mismatches"),
+          sum("bal_drift").as("balance_mismatches"),
+          sum("any_drift").as("drifted_keys"),
+          max(when(col("any_drift") === 1L, col("c_custkey"))).as("max_drifted_key"))
+        .withColumn("drift_ppm", expr("(drifted_keys * 1000000) DIV n_keys"))
+        .orderBy("c_mktsegment")
+    },
       """WITH a AS (
         |  SELECT c_custkey, c_mktsegment,
         |    CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
@@ -1390,9 +1219,31 @@ object Round13bOps extends Family {
         |    THEN c_custkey END) AS BIGINT) AS max_drifted_key,
         |  (CAST(SUM(GREATEST(seg_drift, bal_drift)) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS drift_ppm
-        |FROM j GROUP BY 1 ORDER BY c_mktsegment""".stripMargin,
+        |FROM j GROUP BY 1 ORDER BY c_mktsegment""".stripMargin),
 
-    "llm_prefix_cache_hits" ->
+    // Prefix-cache hit telemetry — the serving-cost lever vLLM-class
+    // engines report: requests share system prompts (doc_id mod 7 picks
+    // one of seven), so every prompt with an already-seen (source,
+    // system-prompt) prefix re-uses the cached KV block. Hits = prompts
+    // minus distinct prefixes per source; tokens saved = hits × the
+    // 16-char ≈ 4-token prefix. One rollup over the request log — the
+    // llm_kv_cache_plan sibling that grades REUSE, not residency.
+    Op("llm_prefix_cache_hits", (s, d) => {
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source"))
+        .withColumn("sys_prompt", concat(lit("sys-"),
+          (col("doc_id") % 7).cast("string")))
+        .groupBy("source", "sys_prompt")
+        .agg(count(lit(1)).as("prompts"))
+        .groupBy("source")
+        .agg(sum("prompts").as("n_prompts"),
+          count(lit(1)).as("distinct_prefixes"),
+          sum(col("prompts") - 1).as("cache_hits"),
+          max("prompts").as("hottest_prefix"))
+        .withColumn("hit_ppm", expr("(cache_hits * 1000000) DIV n_prompts"))
+        .withColumn("tokens_saved", col("cache_hits") * 4L)
+        .orderBy("source")
+    },
       """WITH g AS (
         |  SELECT source, 'sys-' || CAST(doc_id % 7 AS VARCHAR) AS sys_prompt,
         |    CAST(COUNT(*) AS BIGINT) AS prompts
@@ -1404,9 +1255,37 @@ object Round13bOps extends Family {
         |  (CAST(SUM(prompts - 1) AS BIGINT) * 1000000)
         |    // CAST(SUM(prompts) AS BIGINT) AS hit_ppm,
         |  CAST(SUM(prompts - 1) * 4 AS BIGINT) AS tokens_saved
-        |FROM g GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM g GROUP BY 1 ORDER BY source""".stripMargin),
 
-    "service_load_shedding" ->
+    // Priority load shedding — the overload policy between the rate
+    // limiter (service_rate_limit_sliding) and the breaker
+    // (service_circuit_breaker): each (user, day) cell holds a 2-request
+    // budget and requests are admitted STRICTLY by priority class
+    // (purchase > signup > error > click > view), ties broken on the
+    // (ts_us, event_id) total order; everything past the budget sheds.
+    // Cell population scales with per-principal traffic, so the rank
+    // window never sees more than one principal-day. Graded per class:
+    // requests, shed, shed ppm — the strict-priority invariant is that
+    // senior classes shed at most as hard as junior ones.
+    Op("service_load_shedding", (s, d) => {
+      val wCell = Window.partitionBy("user_id", "day")
+        .orderBy("priority", "ts_us", "event_id")
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
+        .withColumn("day", expr("ts_us DIV 86400000000"))
+        .withColumn("priority",
+          when(col("event_type") === "purchase", 0)
+            .when(col("event_type") === "signup", 1)
+            .when(col("event_type") === "error", 2)
+            .when(col("event_type") === "click", 3).otherwise(4))
+        .withColumn("shed",
+          when(row_number().over(wCell) > 2, 1L).otherwise(0L))
+        .groupBy("priority")
+        .agg(count(lit(1)).as("n_requests"), sum("shed").as("n_shed"))
+        .withColumn("kept", col("n_requests") - col("n_shed"))
+        .withColumn("shed_ppm", expr("(n_shed * 1000000) DIV n_requests"))
+        .orderBy("priority")
+    },
       """WITH p AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    epoch_us(ts) // 86400000000 AS day,
@@ -1422,9 +1301,46 @@ object Round13bOps extends Family {
         |  CAST(SUM(shed) AS BIGINT) AS n_shed,
         |  CAST(COUNT(*) - SUM(shed) AS BIGINT) AS kept,
         |  (CAST(SUM(shed) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT) AS shed_ppm
-        |FROM r GROUP BY 1 ORDER BY priority""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY priority""".stripMargin),
 
-    "llm_annotator_qualification" ->
+    // Annotator qualification by gold seeding — the labeling-ops gate
+    // every human-data pipeline runs: every 5th item is a GOLD with a
+    // known answer; good annotators (id % 3 ≠ 0) answer golds correctly
+    // 9 times in 10, bad ones answer md5-noise (~25% right), and only
+    // annotators at ≥ 70% gold accuracy keep their production labels.
+    // Per annotator cohort: annotators, qualified, gold census, and the
+    // production-label mass retained vs discarded — the cost of the
+    // quality bar. Per-annotator rollup then cohort rollup, one scan.
+    Op("llm_annotator_qualification", (s, d) => {
+      val tasks = Tables.events(s, d)
+        .select(col("event_id"), (col("event_id") % 24).as("annotator"))
+        .withColumn("is_gold", col("event_id") % 5 === 0)
+        .withColumn("gold_answer", expr(
+          s"${md5Bits("gold", "event_id", 6)} % 4"))
+        .withColumn("answer",
+          when(col("is_gold") && col("annotator") % 3 =!= 0 &&
+            col("event_id") % 50 =!= 45, col("gold_answer"))
+            .otherwise(expr(
+              s"${md5Bits("ans", "event_id", 6)} % 4")))
+      val perAnnotator = tasks.groupBy("annotator")
+        .agg(sum(when(col("is_gold"), 1L).otherwise(0L)).as("golds"),
+          sum(when(col("is_gold") && col("answer") === col("gold_answer"), 1L)
+            .otherwise(0L)).as("gold_correct"),
+          sum(when(!col("is_gold"), 1L).otherwise(0L)).as("prod_labels"))
+        .withColumn("qualified",
+          col("gold_correct") * 10L >= col("golds") * 7L)
+      perAnnotator.groupBy((col("annotator") % 8).as("cohort"))
+        .agg(count(lit(1)).as("n_annotators"),
+          sum(when(col("qualified"), 1L).otherwise(0L)).as("n_qualified"),
+          sum("golds").as("gold_tasks"),
+          sum("gold_correct").as("gold_correct"),
+          sum("prod_labels").as("labels_total"),
+          sum(when(col("qualified"), col("prod_labels")).otherwise(0L))
+            .as("labels_retained"))
+        .withColumn("retention_ppm",
+          expr("(labels_retained * 1000000) DIV labels_total"))
+        .orderBy("cohort")
+    },
       s"""WITH t AS (
         |  SELECT event_id, event_id % 24 AS annotator,
         |    event_id % 5 = 0 AS is_gold,
@@ -1451,9 +1367,35 @@ object Round13bOps extends Family {
         |  CAST(SUM(CASE WHEN qualified THEN prod_labels ELSE 0 END) AS BIGINT) AS labels_retained,
         |  (CAST(SUM(CASE WHEN qualified THEN prod_labels ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(SUM(prod_labels) AS BIGINT) AS retention_ppm
-        |FROM q GROUP BY 1 ORDER BY cohort""".stripMargin,
+        |FROM q GROUP BY 1 ORDER BY cohort""".stripMargin),
 
-    "agg_conversion_lag" ->
+    // Conversion-lag cohorts — the signup→first-purchase funnel timing
+    // (agg_funnel counts stage mass; this op grades the LAG): per user
+    // the first signup, then the first purchase strictly after it, lag
+    // in exact whole hours; cohorted by signup week: signed, converted,
+    // conversion ppm, min/max lag and total lag mass (the inputs every
+    // activation dashboard plots). Two conditional rollups + one join —
+    // no window over the raw log.
+    Op("agg_conversion_lag", (s, d) => {
+      val ev = Tables.events(s, d)
+      val signup = ev.where(col("event_type") === "signup")
+        .groupBy("user_id").agg(min("ts_us").as("s_ts"))
+      val conv = ev.where(col("event_type") === "purchase")
+        .join(signup, Seq("user_id"))
+        .where(col("ts_us") > col("s_ts"))
+        .groupBy("user_id").agg(min("ts_us").as("p_ts"), min("s_ts").as("s_ts2"))
+        .withColumn("lag_hours", expr("(p_ts - s_ts2) DIV 3600000000"))
+      signup.join(conv.select("user_id", "lag_hours"), Seq("user_id"), "left")
+        .groupBy(expr("s_ts DIV 604800000000").as("cohort_week"))
+        .agg(count(lit(1)).as("signed_up"),
+          sum(when(col("lag_hours").isNotNull, 1L).otherwise(0L)).as("converted"),
+          min("lag_hours").as("min_lag_hours"),
+          max("lag_hours").as("max_lag_hours"),
+          sum(coalesce(col("lag_hours"), lit(0L))).as("lag_hours_mass"))
+        .withColumn("conversion_ppm",
+          expr("(converted * 1000000) DIV signed_up"))
+        .orderBy("cohort_week")
+    },
       """WITH s AS (
         |  SELECT user_id, MIN(epoch_us(ts)) AS s_ts
         |  FROM events WHERE event_type = 'signup' GROUP BY 1),
@@ -1472,6 +1414,15 @@ object Round13bOps extends Family {
         |  (CAST(SUM(CASE WHEN lag_hours IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS conversion_ppm
         |FROM s LEFT JOIN c ON s.user_id = c.user_id
-        |GROUP BY 1 ORDER BY cohort_week""".stripMargin
+        |GROUP BY 1 ORDER BY cohort_week""".stripMargin)
   )
+
+  /** DuckDB twin of [[mrzCd]] — identical 7-3-1 fold in list form. */
+  private def mrzCdSql(field: String): String =
+    s"""CAST(list_sum(list_transform(range(1, 10), i ->
+       |  (CASE WHEN substring($field, i, 1) = '<' THEN 0
+       |        WHEN substring($field, i, 1) BETWEEN '0' AND '9'
+       |          THEN ascii(substring($field, i, 1)) - 48
+       |        ELSE ascii(substring($field, i, 1)) - 55 END)
+       |  * ([7, 3, 1])[((i - 1) % 3) + 1])) AS BIGINT) % 10""".stripMargin
 }

@@ -9,7 +9,7 @@ import graft.Tables
   * impl/oracle style and engine-exactness laws as Round13Ops/Round13bOps.
   */
 object Round13cOps extends Family {
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // Concurrent-session detection — the account-sharing signal a person
     // service audits (one principal, overlapping live sessions): each
     // login opens a session of value-seconds; the classic sweep-line
@@ -19,7 +19,7 @@ object Round13cOps extends Family {
     // principal: sessions, peak concurrency, and the boundary census at
     // ≥ 2 live (the sharing evidence). The sweep is one user-partitioned
     // window over 2 rows per session — linear at any scale.
-    "service_concurrent_sessions" -> ((s, d) => {
+    Op("service_concurrent_sessions", (s, d) => {
       val sess = Tables.events(s, d)
         .select(col("user_id"), col("event_id"), col("ts_us"),
           expr("CAST(FLOOR(value * 1000000) AS BIGINT)").as("dur_us"))
@@ -39,7 +39,29 @@ object Round13cOps extends Family {
         .withColumn("overlap_ppm",
           expr("(overlapping_starts * 1000000) DIV n_sessions"))
         .orderBy("principal")
-    }),
+    },
+      """WITH sess AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    CAST(FLOOR(value * 1000000) AS BIGINT) AS dur_us
+        |  FROM events),
+        |marks AS (
+        |  SELECT user_id, event_id, ts_us AS t, CAST(1 AS BIGINT) AS delta FROM sess
+        |  UNION ALL
+        |  SELECT user_id, event_id, ts_us + dur_us, CAST(-1 AS BIGINT) FROM sess),
+        |sw AS (
+        |  SELECT user_id, delta,
+        |    SUM(delta) OVER (PARTITION BY user_id
+        |      ORDER BY t, delta DESC, event_id
+        |      ROWS UNBOUNDED PRECEDING) AS live
+        |  FROM marks)
+        |SELECT user_id % 8 AS principal,
+        |  CAST(COUNT(*) // 2 AS BIGINT) AS n_sessions,
+        |  CAST(MAX(live) AS BIGINT) AS peak_concurrent,
+        |  CAST(SUM(CASE WHEN delta = 1 AND live >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS overlapping_starts,
+        |  (CAST(SUM(CASE WHEN delta = 1 AND live >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |    * 1000000) // (CAST(COUNT(*) AS BIGINT) // 2) AS overlap_ppm
+        |FROM sw GROUP BY 1 ORDER BY principal""".stripMargin),
 
     // A/B exposure integrity — the experimentation-hygiene audit beside
     // agg_ab_srm (which checks ASSIGNMENT ratios; this one checks that a
@@ -49,7 +71,7 @@ object Round13cOps extends Family {
     // and their data is unusable for the readout. Per flag: exposed
     // users, contaminated users + ppm, exposure events. Two rollups, the
     // distinct-variant count per (flag, user) in between.
-    "service_ab_exposure_integrity" -> ((s, d) => {
+    Op("service_ab_exposure_integrity", (s, d) => {
       val exposures = Tables.events(s, d)
         .select(col("user_id"), col("event_id"))
         .withColumn("flag", (col("event_id") % 3).as("flag"))
@@ -69,7 +91,26 @@ object Round13cOps extends Family {
         .withColumn("contamination_ppm",
           expr("(contaminated_users * 1000000) DIV exposed_users"))
         .orderBy("flag")
-    }),
+    },
+      s"""WITH e AS (
+        |  SELECT user_id, event_id, event_id % 3 AS flag,
+        |    ${duckMd5Bits("CAST(user_id AS VARCHAR) || ':f' || CAST(event_id % 3 AS VARCHAR)", 6)} % 2 AS assigned
+        |  FROM events),
+        |seen AS (
+        |  SELECT flag, user_id,
+        |    CASE WHEN event_id % 97 = 13 THEN 1 - assigned ELSE assigned END AS seen
+        |  FROM e),
+        |pu AS (
+        |  SELECT flag, user_id, CAST(COUNT(*) AS BIGINT) AS events,
+        |    CAST(COUNT(DISTINCT seen) AS BIGINT) AS variants_seen
+        |  FROM seen GROUP BY 1, 2)
+        |SELECT flag, CAST(COUNT(*) AS BIGINT) AS exposed_users,
+        |  CAST(SUM(CASE WHEN variants_seen >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS contaminated_users,
+        |  CAST(SUM(events) AS BIGINT) AS exposure_events,
+        |  (CAST(SUM(CASE WHEN variants_seen >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |    * 1000000) // CAST(COUNT(*) AS BIGINT) AS contamination_ppm
+        |FROM pu GROUP BY 1 ORDER BY flag""".stripMargin),
 
     // Conversation context-growth plan — the serving-capacity question
     // for multi-turn chat (when does a conversation blow the 4096-token
@@ -79,7 +120,7 @@ object Round13cOps extends Family {
     // index past the limit (min over the window-flagged rows) and the
     // overflow-turn mass that would need truncation/summarization. One
     // cumsum window + one rollup.
-    "llm_context_growth_plan" -> ((s, d) => {
+    Op("llm_context_growth_plan", (s, d) => {
       val wc = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.events(s, d)
@@ -98,7 +139,25 @@ object Round13cOps extends Family {
         .withColumn("overflow_ppm",
           expr("(overflow_turns * 1000000) DIV n_turns"))
         .orderBy("principal")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+        |    CAST(FLOOR(value) AS BIGINT) + 10 AS turn_tokens
+        |  FROM events),
+        |w AS (
+        |  SELECT user_id, turn_tokens,
+        |    SUM(turn_tokens) OVER win AS cum_tokens,
+        |    CAST(ROW_NUMBER() OVER win AS INT) AS turn_idx
+        |  FROM t WINDOW win AS (PARTITION BY user_id ORDER BY ts_us, event_id))
+        |SELECT user_id % 8 AS principal, CAST(COUNT(*) AS BIGINT) AS n_turns,
+        |  CAST(SUM(turn_tokens) AS BIGINT) AS token_mass,
+        |  CAST(MIN(CASE WHEN cum_tokens > 4096 THEN turn_idx END) AS INT)
+        |    AS first_overflow_turn,
+        |  CAST(SUM(CASE WHEN cum_tokens > 4096 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS overflow_turns,
+        |  (CAST(SUM(CASE WHEN cum_tokens > 4096 THEN 1 ELSE 0 END) AS BIGINT)
+        |    * 1000000) // CAST(COUNT(*) AS BIGINT) AS overflow_ppm
+        |FROM w GROUP BY 1 ORDER BY principal""".stripMargin),
 
     // Band (theta) join by bucket expansion — the |a−b| ≤ δ join a naive
     // planner turns into a cartesian product: bucket both sides at the
@@ -109,7 +168,7 @@ object Round13cOps extends Family {
     // of |A|×|B|. Graded per priority: bucket-join candidates vs band
     // survivors (the pruning ratio) and the tightest pair. The a<b key
     // order kills self-pairs and mirrors.
-    "join_band_bucketed" -> ((s, d) => {
+    Op("join_band_bucketed", (s, d) => {
       val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("prio"),
         expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)").as("c"))
@@ -129,7 +188,28 @@ object Round13cOps extends Family {
         .withColumn("survival_ppm",
           expr("(band_pairs * 1000000) DIV candidate_pairs"))
         .orderBy("prio")
-    }),
+    },
+      """WITH o AS (
+        |  SELECT o_orderkey AS k, o_orderpriority AS prio,
+        |    CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS c,
+        |    CAST(FLOOR(o_totalprice * 100) AS BIGINT) // 100 AS bucket
+        |  FROM orders),
+        |probe AS (
+        |  SELECT k AS ka, prio, c AS ca, bucket + off.off AS bucket
+        |  FROM o CROSS JOIN (SELECT UNNEST([-1, 0, 1]) AS off) off),
+        |j AS (
+        |  SELECT probe.prio, ca, cb,
+        |    abs(ca - cb) <= 100 AS in_band
+        |  FROM probe JOIN (SELECT k AS kb, prio, c AS cb, bucket FROM o) b
+        |    ON probe.prio = b.prio AND probe.bucket = b.bucket
+        |  WHERE probe.ka < b.kb)
+        |SELECT prio, CAST(COUNT(*) AS BIGINT) AS candidate_pairs,
+        |  CAST(SUM(CASE WHEN in_band THEN 1 ELSE 0 END) AS BIGINT) AS band_pairs,
+        |  CAST(MIN(CASE WHEN in_band THEN abs(ca - cb) END) AS BIGINT)
+        |    AS tightest_diff_cents,
+        |  (CAST(SUM(CASE WHEN in_band THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
+        |    // CAST(COUNT(*) AS BIGINT) AS survival_ppm
+        |FROM j GROUP BY 1 ORDER BY prio""".stripMargin),
 
     // Locale-aware money parsing — the ETL staple behind every ledger
     // ingest: amounts arrive as '$1,234.56' (US), '1.234,56 €' (EU,
@@ -139,7 +219,7 @@ object Round13cOps extends Family {
     // class from the order's own cents, so the graded round-trip (parsed
     // cents mass == source cents mass, zero mismatches) is a proof, not
     // a spot check. Pure string surgery — codegen'd, no UDF.
-    "fn_money_parse_locale" -> ((s, d) => {
+    Op("fn_money_parse_locale", (s, d) => {
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"),
           expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -176,1220 +256,7 @@ object Round13cOps extends Family {
             .as("mismatches"))
         .withColumn("roundtrip_exact", col("mismatches") === 0L)
         .orderBy("cls")
-    }),
-
-    // Access recertification — the quarterly governance sweep over the
-    // grant matrix (warehouse_grants declares WHO may; this op audits
-    // whether they still DO): a bounded principal×object grant matrix
-    // joined against last-use telemetry from the event log; grants never
-    // used revoke immediately, grants idle past 30 days (vs the corpus
-    // high-water mark, so the audit replays exactly) go to the recert
-    // queue. Per principal cohort: grants, active, stale, never-used,
-    // revoke-candidate ppm. Usage rollup is the only data-scaled work;
-    // the matrix side is broadcast.
-    "warehouse_access_recert" -> ((s, d) => {
-      val grants = s.range(16).select(col("id").as("p"))
-        .crossJoin(s.range(10).select(col("id").as("o")))
-        .where((col("p") + col("o")) % 3 =!= 1)
-      val usage = Tables.events(s, d)
-        .select((col("user_id") % 16).as("p"), (col("event_id") % 10).as("o"),
-          col("ts_us"))
-        .groupBy("p", "o").agg(max("ts_us").as("last_use"))
-      val hwm = Tables.events(s, d).agg(max("ts_us").as("hwm"))
-      usage.join(broadcast(grants), Seq("p", "o"), "right")
-        .crossJoin(broadcast(hwm))
-        .withColumn("status",
-          when(col("last_use").isNull, lit("never_used"))
-            .when(col("hwm") - col("last_use") > 2592000000000L, lit("stale"))
-            .otherwise(lit("active")))
-        .groupBy((col("p") % 4).as("cohort"))
-        .agg(count(lit(1)).as("n_grants"),
-          sum(when(col("status") === "active", 1L).otherwise(0L)).as("active"),
-          sum(when(col("status") === "stale", 1L).otherwise(0L)).as("stale"),
-          sum(when(col("status") === "never_used", 1L).otherwise(0L))
-            .as("never_used"))
-        .withColumn("revoke_ppm",
-          expr("((stale + never_used) * 1000000) DIV n_grants"))
-        .orderBy("cohort")
-    }),
-
-    // JWT claims parsing + expiry validation — the auth gate in front of
-    // every person-service endpoint: tokens carry a base64url payload
-    // (fixture-minted from the event's own fields, padding stripped like
-    // real JWTs); the parser re-pads, maps the url alphabet back to
-    // base64, decodes, and extracts claims by JSON path; a token is
-    // EXPIRED when its exp claim sits at or before the corpus
-    // high-water second (exact integer compare). Per scope: tokens,
-    // expired + ppm, distinct subjects. All codegen'd string/JSON
-    // builtins — no UDF.
-    "fn_jwt_parse" -> ((s, d) => {
-      val hwm = Tables.events(s, d)
-        .agg(expr("MAX(ts_us DIV 1000000)").as("now_sec"))
-      val minted = Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts_us DIV 1000000").as("ts_sec"),
-          expr("CAST(FLOOR(value) AS BIGINT)").as("v"))
-        .withColumn("payload", concat(lit("{\"sub\":\"u"),
-          col("user_id").cast("string"), lit("\",\"exp\":"),
-          (col("ts_sec") + col("v") * 10000L).cast("string"),
-          lit(",\"scope\":\""), col("event_type"), lit("\"}")))
-        .withColumn("token", concat(lit("eyJhbGciOiJIUzI1NiJ9."),
-          regexp_replace(translate(expr("base64(CAST(payload AS BINARY))"),
-            "+/", "-_"), "=", ""), lit(".sig")))
-      minted
-        .withColumn("p64", expr("split(token, '\\\\.')[1]"))
-        .withColumn("p64pad", concat(col("p64"),
-          expr("repeat('=', (4 - length(p64) % 4) % 4)")))
-        .withColumn("claims",
-          expr("CAST(unbase64(translate(p64pad, '-_', '+/')) AS STRING)"))
-        .withColumn("sub", expr("get_json_object(claims, '$.sub')"))
-        .withColumn("exp", expr("CAST(get_json_object(claims, '$.exp') AS BIGINT)"))
-        .withColumn("scope", expr("get_json_object(claims, '$.scope')"))
-        .crossJoin(broadcast(hwm))
-        .withColumn("expired", col("exp") <= col("now_sec"))
-        .groupBy("scope")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("expired"), 1L).otherwise(0L)).as("n_expired"),
-          countDistinct("sub").as("n_subjects"))
-        .withColumn("expired_ppm", expr("(n_expired * 1000000) DIV n_tokens"))
-        .orderBy("scope")
-    }),
-
-    // GPU bin-packing plan — the training-cluster capacity question: jobs
-    // (memory demand from doc size) packed pool-by-pool in size-DESC
-    // order onto 80 GB nodes by contiguous cumulative allocation; a job
-    // whose span crosses a node boundary pays a migration (the straddler
-    // census — the cost of NOT solving true bin packing, reported
-    // honestly). Per pool: jobs, memory mass, nodes used (= the ceil
-    // lower bound under contiguous allocation), straddlers + ppm, and
-    // node utilization ppm. One pool-partitioned cumsum window + rollup.
-    "llm_gpu_packing_plan" -> ((s, d) => {
-      val wp = Window.partitionBy("pool")
-        .orderBy(col("mem_gb").desc, col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source").as("pool"),
-          (expr("n_chars DIV 100") + 1L).as("mem_gb"))
-        .withColumn("cum", sum("mem_gb").over(wp))
-        .withColumn("straddle",
-          when(expr("(cum - 1) DIV 80") =!= expr("(cum - mem_gb) DIV 80"), 1L)
-            .otherwise(0L))
-        .groupBy("pool")
-        .agg(count(lit(1)).as("n_jobs"), sum("mem_gb").as("mem_total_gb"),
-          expr("(MAX(cum) + 79) DIV 80").as("nodes_used"),
-          sum("straddle").as("straddlers"))
-        .withColumn("straddle_ppm", expr("(straddlers * 1000000) DIV n_jobs"))
-        .withColumn("utilization_ppm",
-          expr("(mem_total_gb * 1000000) DIV (nodes_used * 80)"))
-        .orderBy("pool")
-    }),
-
-    // Dormancy → reactivation census — the growth-analytics counterpart
-    // of agg_cohort_retention (retention asks who stays; this asks who
-    // COMES BACK): a user event after a > 7-day silence is a
-    // reactivation; graded per calendar week: active users, reactivated
-    // users, events, reactivation ppm — the resurrection curve a growth
-    // team plots. One user-partitioned lag + one week rollup.
-    "agg_dormancy_reactivation" -> ((s, d) => {
-      val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-        .withColumn("gap_us", col("ts_us") - lag("ts_us", 1).over(wu))
-        .withColumn("reactivated",
-          when(col("gap_us") > 604800000000L, 1L).otherwise(0L))
-        .groupBy(expr("ts_us DIV 604800000000").as("week"))
-        .agg(countDistinct("user_id").as("active_users"),
-          count(lit(1)).as("n_events"),
-          sum("reactivated").as("reactivations"),
-          countDistinct(when(col("reactivated") === 1L, col("user_id")))
-            .as("reactivated_users"))
-        .withColumn("reactivation_ppm",
-          expr("(reactivated_users * 1000000) DIV active_users"))
-        .orderBy("week")
-    }),
-
-    // IP-range lookup join — the classic geo/ASN enrich that a naive
-    // planner executes as a range-predicate cartesian: the range dim
-    // (256 /8 blocks, each split at a planted offset into two owners) is
-    // BUCKETED at /8 granularity so the probe joins on an exact equi-key
-    // (ip DIV 2²⁴) and only the in-bucket containment check remains —
-    // the range join becomes one broadcast equi-join at any traffic
-    // volume. Per owner class: lookups, matched, unmatched (the planted
-    // reserved blocks), match ppm.
-    "join_ip_range_lookup" -> ((s, d) => {
-      val ranges = s.range(256).select(col("id").as("block"))
-        .withColumn("split_at", expr(
-          s"${md5Bits("ip", "block", 6)} % 16777216"))
-        .select(
-          struct(col("block"), (col("block") * 16777216L).as("lo"),
-            (col("block") * 16777216L + col("split_at")).as("hi"),
-            concat(lit("as"), (col("block") % 5).cast("string")).as("owner")).as("r"))
-        .unionByName(s.range(256).select(col("id").as("block"))
-          .withColumn("split_at", expr(
-            s"${md5Bits("ip", "block", 6)} % 16777216"))
-          .where(col("block") % 8 =!= 3) // every 8th block's upper half is reserved
-          .select(struct(col("block"),
-            (col("block") * 16777216L + col("split_at")).as("lo"),
-            ((col("block") + 1) * 16777216L).as("hi"),
-            concat(lit("as"), ((col("block") + 2) % 5).cast("string")).as("owner")).as("r")))
-        .select(col("r.block").as("block"), col("r.lo").as("lo"),
-          col("r.hi").as("hi"), col("r.owner").as("owner"))
-      val probes = Tables.events(s, d)
-        .select(col("event_id"), expr(
-          s"${md5Bits("addr", "event_id", 8)} % 4294967296").as("ip"))
-        .withColumn("block", expr("ip DIV 16777216"))
-      probes.join(broadcast(ranges), Seq("block"), "left")
-        .withColumn("hit",
-          when(col("ip") >= col("lo") && col("ip") < col("hi"), 1L).otherwise(0L))
-        .groupBy("event_id", "ip")
-        .agg(max(when(col("hit") === 1L, col("owner"))).as("owner"))
-        .groupBy(coalesce(col("owner"), lit("unrouted")).as("owner"))
-        .agg(count(lit(1)).as("n_lookups"))
-        .withColumn("routed", col("owner") =!= "unrouted")
-        .orderBy("owner")
-    }),
-
-    // Train/test split-leakage audit — the contamination check BETWEEN
-    // llm_dedup_* (which dedups one corpus) and llm_decontam_ngram
-    // (which screens against a known eval set): docs hash-split 90/10
-    // into train/test, near-dup clusters keyed by a fingerprint (planted
-    // pairs: every doc_id ≡ 1 mod 6 clusters with its predecessor — the
-    // dedup stage's output, consumed here as the cluster key), and any
-    // cluster spanning BOTH sides leaks test signal into training. Per
-    // source:
-    // clusters, leaking clusters, test docs, tainted test docs + ppm
-    // (the fraction of the eval set whose score is untrustworthy). Two
-    // rollups over one scan.
-    "llm_split_leakage_audit" -> ((s, d) => {
-      val split = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"),
-          expr("""md5(concat('fp:', CAST(doc_id -
-                 |  (CASE WHEN doc_id % 6 = 1 THEN 1 ELSE 0 END) AS STRING)))"""
-            .stripMargin).as("fp"))
-        .withColumn("side", when(expr(
-          s"${md5Bits("split", "doc_id", 6)} % 10") === 7,
-          lit("test")).otherwise(lit("train")))
-      val clusters = split.groupBy("fp")
-        .agg(expr("min_by(source, doc_id)").as("source"),
-          sum(when(col("side") === "train", 1L).otherwise(0L)).as("train_docs"),
-          sum(when(col("side") === "test", 1L).otherwise(0L)).as("test_docs"))
-        .withColumn("leaks", col("train_docs") > 0L && col("test_docs") > 0L)
-      clusters.groupBy("source")
-        .agg(count(lit(1)).as("n_clusters"),
-          sum(when(col("leaks"), 1L).otherwise(0L)).as("leaking_clusters"),
-          sum("test_docs").as("test_docs"),
-          sum(when(col("leaks"), col("test_docs")).otherwise(0L))
-            .as("tainted_test_docs"))
-        .withColumn("taint_ppm",
-          when(col("test_docs") > 0L,
-            expr("(tainted_test_docs * 1000000) DIV test_docs")).otherwise(0L))
-        .orderBy("source")
-    }),
-
-    // Consent bitmask decode — the ad-tech/privacy purpose-string gate
-    // (TCF-style): each user carries a 12-purpose consent bitmask; the
-    // decoder explodes the bounded purpose axis and tests bits by shift
-    // — a 12× fixed fan-out, linear at any scale. Planted: purpose 3 is
-    // universally denied (masked off), purpose 0 universally granted.
-    // Per purpose: users, granted + ppm — the audience-size readout a
-    // consent-management platform serves.
-    "fn_consent_bitmask_decode" -> ((s, d) => {
-      val masks = Tables.customer(s, d)
-        .select(col("c_custkey"),
-          (expr(s"${md5Bits("cm", "c_custkey", 4)} % 4096")
-            .bitwiseOR(lit(1L))).bitwiseAND(lit(4087L)).as("mask"))
-      masks
-        .withColumn("purpose", explode(expr("sequence(0, 11)")))
-        .withColumn("granted", expr("shiftright(mask, purpose) % 2"))
-        .groupBy("purpose")
-        .agg(count(lit(1)).as("n_users"), sum("granted").as("n_granted"))
-        .withColumn("grant_ppm", expr("(n_granted * 1000000) DIV n_users"))
-        .orderBy("purpose")
-    }),
-
-    // Playback QoE rollup — the streaming-video telemetry triple every
-    // player team tracks: per (user, day) viewing session the bitrate
-    // ladder rung is md5-assigned per event, SWITCHES are lag-detected
-    // rung changes (the instability cost), REBUFFERS are the error
-    // events; the session QoE in exact milli = 1000 − rebuffer-rate
-    // penalty − half the switch rate. One session-partitioned lag + two
-    // rollups; everything integer.
-    "mm_playback_qoe" -> ((s, d) => {
-      val wSess = Window.partitionBy("user_id", "day").orderBy("ts_us", "event_id")
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-        .withColumn("day", expr("ts_us DIV 86400000000"))
-        .withColumn("rung", expr(
-          s"element_at(array(240, 360, 480, 720, 1080), CAST(${md5Bits("br", "event_id", 4)} % 5 AS INT) + 1)"))
-        .withColumn("switched",
-          when(col("rung") =!= lag("rung", 1).over(wSess), 1L).otherwise(0L))
-        .withColumn("rebuffer",
-          when(col("event_type") === "error", 1L).otherwise(0L))
-        .groupBy((col("user_id") % 8).as("principal"))
-        .agg(countDistinct("user_id", "day").as("n_sessions"),
-          count(lit(1)).as("n_events"),
-          sum("switched").as("switches"),
-          sum("rebuffer").as("rebuffers"),
-          sum("rung").as("rung_mass"))
-        .withColumn("mean_rung", expr("rung_mass DIV n_events"))
-        .withColumn("qoe_milli", expr(
-          "1000 - (rebuffers * 1000) DIV n_events - (switches * 500) DIV n_events"))
-        .orderBy("principal")
-    }),
-
-    // PII tag propagation through lineage — the governance closure every
-    // catalog runs (tag the sources, and every derived table downstream
-    // inherits the tag): a bounded 20-table lineage DAG (edges strictly
-    // increasing, so it IS a DAG), PII seeded on the three ingest tables.
-    // The ≤4-hop closure is built in ONE plan — walks of length 0..4 via
-    // chained self-joins of the 20-row edge table (≤48 walks total), then
-    // min-hop per table = the BFS level. The r13 shape ran four
-    // SEQUENTIAL frontier anti-join job waves and paid ~8 calib-units of
-    // pure stage-scheduling latency for 20 rows of metadata (VERDICT r13
-    // item 5); one declarative plan schedules once.
-    "warehouse_tag_propagation" -> ((s, d) => {
-      def tables = s.range(20).select(col("id").as("t"))
-      def edges = tables.select(col("t").as("src"), (col("t") + 3).as("dst"))
-        .where(col("dst") < 20)
-        .unionByName(tables.where(col("t") % 2 === 0)
-          .select(col("t").as("src"), (col("t") + 5).as("dst"))
-          .where(col("dst") < 20))
-      def step(w: DataFrame, h: Int): DataFrame = {
-        val e = edges
-        w.join(e, w("n") === e("src")).select(col("dst").as("n"), lit(h).as("hop"))
-      }
-      val w0 = tables.where(col("t") <= 2)
-        .select(col("t").as("n"), lit(0).as("hop"))
-      val w1 = step(w0, 1); val w2 = step(w1, 2)
-      val w3 = step(w2, 3); val w4 = step(w3, 4)
-      val tagged = w0.unionByName(w1).unionByName(w2).unionByName(w3)
-        .unionByName(w4)
-        .groupBy(col("n").as("t")).agg(min("hop").as("hop"))
-      tagged.groupBy("hop")
-        .agg(count(lit(1)).as("newly_tagged"),
-          expr("array_join(sort_array(collect_list(CAST(t AS STRING))), ',')")
-            .as("tables_csv"))
-        .orderBy("hop")
-    }),
-
-    // Saga compensation audit — the distributed-transaction ledger check
-    // for a microservice person-store: the request log as 6-step sagas;
-    // a quarter of sagas fail at an md5-chosen step, and every executed
-    // step of a failed saga must log a compensation in reverse — except
-    // the planted txn ≡ 3 mod 19 class, which lost one (the dangling
-    // side-effect an auditor hunts). Per shard: sagas, failed, fully
-    // compensated, missing-compensation count + ppm, and the orphaned
-    // step mass. One rollup over the txn grouping.
-    "service_saga_audit" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(expr("event_id DIV 6").as("txn"))
-        .groupBy("txn")
-        .agg(count(lit(1)).as("observed_steps"))
-        .withColumn("h", expr(
-          md5Bits("saga", "txn", 6)))
-        .withColumn("failed", col("h") % 4 === 0)
-        .withColumn("fail_at", when(col("failed"), col("h") % 6 + 1))
-        .withColumn("executed",
-          when(col("failed"), least(col("observed_steps"), col("fail_at") - 1))
-            .otherwise(col("observed_steps")))
-        .withColumn("compensations",
-          when(!col("failed"), lit(0L))
-            .when(col("txn") % 19 === 3, greatest(col("executed") - 1, lit(0L)))
-            .otherwise(col("executed")))
-        .withColumn("missing",
-          col("failed") && col("compensations") < col("executed"))
-        .groupBy((col("txn") % 8).as("shard"))
-        .agg(count(lit(1)).as("n_sagas"),
-          sum(when(col("failed"), 1L).otherwise(0L)).as("n_failed"),
-          sum(when(col("failed") && !col("missing"), 1L).otherwise(0L))
-            .as("fully_compensated"),
-          sum(when(col("missing"), 1L).otherwise(0L)).as("missing_compensation"),
-          sum(when(col("missing"), col("executed") - col("compensations"))
-            .otherwise(0L)).as("orphaned_steps"))
-        .withColumn("missing_ppm",
-          expr("(missing_compensation * 1000000) DIV n_sagas"))
-        .orderBy("shard")
-    }),
-
-    // Damerau–Levenshtein edit eval — exercises the new NATIVE
-    // graftbridge expression (true Lowrance–Wagner DL, not OSA; Spark
-    // ships only plain levenshtein): 16-char md5 keys corrupted per
-    // class — adjacent TRANSPOSITION (DL charges 1 where levenshtein
-    // charges 2 — the point of the algorithm), single substitution,
-    // single deletion, clean. Graded per class: both distance masses and
-    // the transposition SAVINGS (lev − dl), positive exactly where
-    // transpositions were planted. DuckDB's damerau_levenshtein has the
-    // identical true-DL semantics ("CA"→"ABC" = 2) — the oracle twin.
-    "fn_damerau_edit_eval" -> ((s, d) => {
-      Tables.customer(s, d)
-        .select(col("c_custkey"),
-          expr("substring(md5(concat('dl:', CAST(c_custkey AS STRING))), 1, 16)")
-            .as("ref"))
-        .withColumn("cls",
-          when(col("c_custkey") % 4 === 0, lit("transpose"))
-            .when(col("c_custkey") % 4 === 1, lit("substitute"))
-            .when(col("c_custkey") % 4 === 2, lit("delete"))
-            .otherwise(lit("clean")))
-        .withColumn("hyp",
-          when(col("cls") === "transpose", expr(
-            "concat(substring(ref, 1, 4), substring(ref, 6, 1), substring(ref, 5, 1), substring(ref, 7, 10))"))
-            .when(col("cls") === "substitute", expr(
-              """concat(substring(ref, 1, 8),
-                |  CASE WHEN substring(ref, 9, 1) = '9' THEN '0'
-                |       WHEN substring(ref, 9, 1) = 'f' THEN 'a'
-                |       ELSE chr(ascii(substring(ref, 9, 1)) + 1) END,
-                |  substring(ref, 10, 7))""".stripMargin))
-            .when(col("cls") === "delete", expr(
-              "concat(substring(ref, 1, 2), substring(ref, 4, 13))"))
-            .otherwise(col("ref")))
-        .withColumn("dl", expr("graft_damerau(ref, hyp)"))
-        .withColumn("lev", expr("levenshtein(ref, hyp)"))
-        .groupBy("cls")
-        .agg(count(lit(1)).as("n"),
-          sum("dl").as("dl_mass"), sum("lev").as("lev_mass"),
-          max("dl").as("max_dl"))
-        .withColumn("transposition_savings", col("lev_mass") - col("dl_mass"))
-        .orderBy("cls")
-    }),
-
-    // Entity resolution under transposition-aware matching — the person-
-    // linkage upgrade join_entity_resolution can't express with plain
-    // levenshtein: every master key carries a constant 'xy' checksum
-    // suffix and the dirty roster corrupts ONLY that suffix ('yx'
-    // transposed / 'xz' shifted / 'zw' double-damaged / clean), so a
-    // cross-candidate in the same 8-char block always sits at key-digit
-    // distance ≥ 1 PLUS suffix distance ≥ 1 — no false links by
-    // construction, bounded candidates, corruptions never touch the
-    // block key. Matched at true-DL ≤ 1: the transposed class links at
-    // DL 1 where levenshtein says 2 — `lev_missed` counts exactly the
-    // records a plain-edit matcher would orphan; the double-damaged
-    // class is provably unmatchable at ≤ 1. Per class: exact/fuzzy/
-    // unmatched + lev_missed.
-    "join_entity_resolution_dl" -> ((s, d) => {
-      val master = Tables.customer(s, d)
-        .select(expr("concat('p', lpad(CAST(c_custkey AS STRING), 9, '0'), 'xy')")
-          .as("m_name"))
-        .withColumn("block", expr("substring(m_name, 1, 8)"))
-      val dirty = Tables.customer(s, d)
-        .select(col("c_custkey"),
-          expr("concat('p', lpad(CAST(c_custkey AS STRING), 9, '0'))").as("stem"))
-        .withColumn("cls",
-          when(col("c_custkey") % 5 === 1, lit("transposed"))
-            .when(col("c_custkey") % 5 === 2, lit("shifted"))
-            .when(col("c_custkey") % 5 === 3, lit("double_shift"))
-            .otherwise(lit("clean")))
-        .withColumn("d_name", concat(col("stem"),
-          when(col("cls") === "transposed", lit("yx"))
-            .when(col("cls") === "shifted", lit("xz"))
-            .when(col("cls") === "double_shift", lit("zw"))
-            .otherwise(lit("xy"))))
-        .withColumn("block", expr("substring(d_name, 1, 8)"))
-      val scored = dirty.join(master, Seq("block"), "left")
-        .withColumn("dl", expr("graft_damerau(d_name, m_name)"))
-        .withColumn("lev", expr("levenshtein(d_name, m_name)"))
-        .groupBy("c_custkey", "cls")
-        .agg(min(when(col("dl") <= 1, col("dl"))).as("best_dl"),
-          min(when(col("dl") <= 1, col("lev"))).as("best_lev"))
-      scored.groupBy("cls")
-        .agg(count(lit(1)).as("n_records"),
-          sum(when(col("best_dl") === 0, 1L).otherwise(0L)).as("matched_exact"),
-          sum(when(col("best_dl") === 1, 1L).otherwise(0L)).as("matched_fuzzy"),
-          sum(when(col("best_dl").isNull, 1L).otherwise(0L)).as("unmatched"),
-          sum(when(col("best_dl") <= 1 && col("best_lev") > 1, 1L).otherwise(0L))
-            .as("lev_missed"))
-        .orderBy("cls")
-    }),
-
-    // Dead-column audit — the warehouse hygiene sweep before a schema
-    // diet: the query log references a 16-column bitmask per query
-    // (md5-drawn, with columns 13–15 masked off — the planted dead
-    // tier); per column: referencing queries, the last week it was
-    // touched, and the DEAD flag that feeds the drop-column proposal.
-    // Bounded 16× explode over the log + one rollup.
-    "warehouse_dead_column_audit" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("event_id"), expr("ts_us DIV 604800000000").as("week"),
-          expr(s"${md5Bits("q", "event_id", 4)} % 65536")
-            .bitwiseAND(lit(8191L)).as("mask"))
-        .withColumn("column_id", explode(expr("sequence(0, 15)")))
-        .withColumn("referenced", expr("shiftright(mask, column_id) % 2"))
-        .groupBy("column_id")
-        .agg(sum("referenced").as("ref_queries"),
-          max(when(col("referenced") === 1L, col("week"))).as("last_ref_week"))
-        .withColumn("dead", col("ref_queries") === 0L)
-        .orderBy("column_id")
-    }),
-
-    // Shapley-value channel attribution — the game-theoretic upgrade of
-    // linear attribution (win_attribution splits credit by position; this
-    // op computes the EXACT Shapley value of the 3-channel cooperative
-    // game): journeys = (user, week) with touched-channel flags, a
-    // conversion is a purchase that week; v(S) = conversions whose
-    // touched set fits inside coalition S. With n = 3 the formula is a
-    // bounded 8-coalition algebra — subset sums by bitmask join, Shapley
-    // weights 2/6, 1/6, 1/6, 2/6 in exact sixths of a micro-credit. The
-    // graded efficiency law Σφ = v(N) − v(∅) ties the whole table out.
-    // One journey rollup is the only data-scaled work.
-    "agg_shapley_attribution" -> ((s, d) => {
-      val journeys = Tables.events(s, d)
-        .select(col("user_id"), expr("ts_us DIV 604800000000").as("week"),
-          col("event_type"))
-        .groupBy("user_id", "week")
-        .agg(max(when(col("event_type") === "click", 1).otherwise(0)).as("c0"),
-          max(when(col("event_type") === "view", 1).otherwise(0)).as("c1"),
-          max(when(col("event_type") === "signup", 1).otherwise(0)).as("c2"),
-          max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
-        .where(col("conv") === 1)
-        .select((col("c0") + col("c1") * 2 + col("c2") * 4).as("cell"))
-        .groupBy("cell").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // bounded 8 rows
-      val coalitions = s.range(8).select(col("id").cast("int").as("coalition"))
-      val v = coalitions.join(journeys,
-          (col("cell").bitwiseAND(col("coalition"))) === col("cell"))
-        .groupBy("coalition").agg(sum("n").as("v"))
-      val vFull = coalitions.join(v, Seq("coalition"), "left")
-        .na.fill(0L, Seq("v"))
-      val channels = s.range(3).select(col("id").cast("int").as("channel"))
-      channels
-        .join(vFull.select(col("coalition").as("s"), col("v").as("vs")),
-          (col("s").bitwiseAND(expr("shiftleft(1, channel)"))) === 0)
-        .join(vFull.select(col("coalition").as("si"), col("v").as("vsi")),
-          col("si") === col("s") + expr("shiftleft(1, channel)"))
-        .withColumn("wnum",
-          when(expr("bit_count(s)") === 0, 2L)
-            .when(expr("bit_count(s)") === 1, 1L).otherwise(2L))
-        .groupBy("channel")
-        .agg(sum(col("wnum") * (col("vsi") - col("vs"))).as("six_marginals"))
-        .withColumn("phi_micro", expr("(six_marginals * 1000000) DIV 6"))
-        .crossJoin(broadcast(vFull.where(col("coalition") === 7)
-          .select(col("v").as("v_full"))))
-        .crossJoin(broadcast(vFull.where(col("coalition") === 0)
-          .select(col("v").as("v_empty"))))
-        .select("channel", "phi_micro", "six_marginals", "v_full", "v_empty")
-        .orderBy("channel")
-    }),
-
-    // Max-min fair share (water-filling) — the multi-tenant allocator
-    // every shared cluster runs: demands per principal, capacity = 60%
-    // of total demand, the fill level found by the classic sorted-prefix
-    // test (d_i affordable for everyone from rank i up ⇔ satisfied), the
-    // unsatisfied tail split at the integer level with the remainder
-    // handed one unit each to the largest demands (deterministic total
-    // order). Graded per principal: demand, allocation, clipped — and
-    // the allocations sum EXACTLY to capacity. The demand rollup is the
-    // only data-scaled work; the fill algebra runs on 8 rows.
-    "service_maxmin_fair_share" -> ((s, d) => {
-      val demands = Tables.events(s, d)
-        .groupBy((col("user_id") % 8).as("principal"))
-        .agg(count(lit(1)).as("demand"))
-      val wAsc = Window.orderBy(col("demand"), col("principal"))
-      val n = 8
-      val ranked = demands
-        .withColumn("idx", row_number().over(wAsc))
-        .withColumn("prefix", sum("demand").over(
-          wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .crossJoin(broadcast(demands.agg(
-          expr("(SUM(demand) * 3) DIV 5").as("cap"))))
-        .withColumn("affordable",
-          col("demand") * (lit(n) - col("idx") + 1) + col("prefix")
-            - col("demand") <= col("cap"))
-      val k = ranked.agg(
-        sum(when(col("affordable"), 1).otherwise(0)).as("k"),
-        max(when(col("affordable"), col("prefix"))).as("prefix_k")).na.fill(0)
-      ranked.crossJoin(broadcast(k))
-        .withColumn("level", expr(
-          "(cap - coalesce(prefix_k, 0)) DIV (CASE WHEN k < 8 THEN 8 - k ELSE 1 END)"))
-        .withColumn("rem", expr(
-          "(cap - coalesce(prefix_k, 0)) % (CASE WHEN k < 8 THEN 8 - k ELSE 1 END)"))
-        .withColumn("allocation",
-          when(col("affordable"), col("demand"))
-            .otherwise(col("level") +
-              when(col("idx") > lit(n) - col("rem"), 1L).otherwise(0L)))
-        .withColumn("clipped", !col("affordable"))
-        .select("principal", "demand", "allocation", "clipped")
-        .orderBy("principal")
-    }),
-
-    // T5-style span-corruption plan — the pretraining-objective budget:
-    // 15% of each doc's tokens corrupted in mean-length-3 spans, one
-    // sentinel token per span; graded per source: token mass, corrupted
-    // mass, sentinel mass, denoised output length and the realized
-    // corruption ratio ppm (≈ 150000 with the exact ceil-div bias the
-    // plan must account for). One projection + one rollup.
-    "llm_span_corruption_plan" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), expr("n_chars DIV 4").as("tokens"))
-        .withColumn("target", expr("(tokens * 150000) DIV 1000000"))
-        .withColumn("spans", expr("(target + 2) DIV 3"))
-        .withColumn("corrupted", least(col("spans") * 3, col("tokens")))
-        .withColumn("out_len",
-          col("tokens") - col("corrupted") + col("spans"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("tokens").as("token_mass"),
-          sum("corrupted").as("corrupted_mass"),
-          sum("spans").as("sentinel_mass"),
-          sum("out_len").as("output_mass"))
-        .withColumn("realized_ratio_ppm",
-          expr("(corrupted_mass * 1000000) DIV token_mass"))
-        .orderBy("source")
-    }),
-
-    // Distributed clock-skew audit — the NTP-style minimum filter over
-    // observed offsets: each node (user % 8) stamps events with a
-    // planted constant skew (node·1500 − 4000 µs) plus md5 jitter in
-    // [0, 1000); the receive-side offset series per node is filtered by
-    // MIN (jitter is strictly additive, so the minimum recovers the true
-    // skew to within the smallest jitter draw — the classic argument).
-    // Per node: events, estimated skew, jitter spread, and the
-    // second-boundary drift mass (events whose send and receive stamps
-    // land in different wall-clock seconds — the bucketing disagreement
-    // any per-second rollup downstream inherits).
-    "service_clock_skew_audit" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-        .withColumn("node", col("user_id") % 8)
-        .withColumn("offset", col("node") * 1500L - 4000L +
-          expr(s"${md5Bits("j", "event_id", 4)} % 1000"))
-        .withColumn("recv_us", col("ts_us") + col("offset"))
-        .withColumn("crossed",
-          when(expr("recv_us DIV 1000000") =!= expr("ts_us DIV 1000000"), 1L)
-            .otherwise(0L))
-        .groupBy("node")
-        .agg(count(lit(1)).as("n_events"),
-          min("offset").as("est_skew_us"),
-          (max("offset") - min("offset")).as("jitter_spread_us"),
-          sum("crossed").as("bucket_drift"))
-        .withColumn("drift_ppm", expr("(bucket_drift * 1000000) DIV n_events"))
-        .orderBy("node")
-    }),
-
-    // Ingest watermark alignment — the multi-source barrier every
-    // incremental pipeline computes before advancing: per source stream
-    // (event type) the high-water mark, the GLOBAL SAFE BARRIER is the
-    // minimum of them, and each source's lead over the barrier names the
-    // straggler holding everyone back. Exact µs integers; one rollup +
-    // one broadcast scalar.
-    "warehouse_watermark_alignment" -> ((s, d) => {
-      val marks = Tables.events(s, d)
-        .groupBy("event_type")
-        .agg(max("ts_us").as("hwm_us"), count(lit(1)).as("n_rows"))
-      val barrier = marks.agg(min("hwm_us").as("barrier_us"))
-      marks.crossJoin(broadcast(barrier))
-        .withColumn("lead_us", col("hwm_us") - col("barrier_us"))
-        .withColumn("is_straggler", col("lead_us") === 0L)
-        .select("event_type", "n_rows", "hwm_us", "barrier_us", "lead_us",
-          "is_straggler")
-        .orderBy("event_type")
-    }),
-
-    // Model-router threshold sweep — the serving cost/quality frontier:
-    // requests carry an md5 router confidence (milli) and a planted
-    // quality structure (the large model wins the low-confidence tail);
-    // FOUR candidate thresholds are swept in one pass (a bounded 4×
-    // explode — the whole frontier from one scan, the way a router is
-    // actually tuned offline): below the threshold the request escalates
-    // to the large model at 10× cost. Per threshold: requests escalated,
-    // cost units, quality wins kept vs always-large, and the
-    // cost-per-win frontier point in exact milli.
-    "llm_model_router_sweep" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("event_id"))
-        .withColumn("conf_milli", expr(
-          s"${md5Bits("rc", "event_id", 6)} % 1000"))
-        .withColumn("large_wins", expr(
-          s"${md5Bits("rq", "event_id", 6)} % 1000") <
-          (lit(900L) - col("conf_milli")))
-        .withColumn("threshold", explode(expr("array(200, 400, 600, 800)")))
-        .withColumn("escalated", col("conf_milli") < col("threshold"))
-        .groupBy("threshold")
-        .agg(count(lit(1)).as("n_requests"),
-          sum(when(col("escalated"), 1L).otherwise(0L)).as("n_escalated"),
-          sum(when(col("escalated"), 10L).otherwise(1L)).as("cost_units"),
-          sum(when(col("escalated") && col("large_wins"), 1L).otherwise(0L))
-            .as("wins_kept"),
-          sum(when(col("large_wins"), 1L).otherwise(0L)).as("wins_possible"))
-        .withColumn("recall_milli",
-          expr("(wins_kept * 1000) DIV NULLIF(wins_possible, 0)"))
-        .withColumn("cost_per_win_milli",
-          expr("(cost_units * 1000) DIV (wins_kept + 1)"))
-        .orderBy("threshold")
-    }),
-
-    // HTML stripping + entity decoding — the first pass of every web
-    // corpus: planted markup per class (block tags, attributed tags with
-    // escaped entities, entity-only, plain), tags removed by one regex
-    // sweep, entities decoded in the STANDARD order (&amp; strictly
-    // last, so '&amp;lt;' decodes to the literal '&lt;' and not '<' —
-    // the double-decode bug this op guards against). Graded per class:
-    // docs, chars in/out, tags removed, entities decoded — all counted
-    // by the engines' regex machinery, no UDF.
-    "llm_html_strip" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("text"))
-        .withColumn("cls",
-          when(col("doc_id") % 4 === 0, lit("block"))
-            .when(col("doc_id") % 4 === 1, lit("attributed"))
-            .when(col("doc_id") % 4 === 2, lit("entities")).otherwise(lit("plain")))
-        .withColumn("html",
-          when(col("cls") === "block", concat(lit("<p>"), col("text"), lit("</p>")))
-            .when(col("cls") === "attributed", concat(
-              lit("<div class=\"a\">"), col("text"), lit(" &amp; &lt;tag&gt;</div>")))
-            .when(col("cls") === "entities", concat(
-              col("text"), lit(" &quot;q&quot; &#39;s&#39;")))
-            .otherwise(col("text")))
-        .withColumn("tags", regexp_count(col("html"), lit("<[^>]*>")))
-        .withColumn("entities", regexp_count(col("html"),
-          lit("&(amp|lt|gt|quot|#39);")))
-        .withColumn("stripped", regexp_replace(col("html"), "<[^>]*>", ""))
-        .withColumn("decoded",
-          regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-            regexp_replace(col("stripped"),
-              "&lt;", "<"), "&gt;", ">"), "&quot;", "\""), "&#39;", "'"),
-            "&amp;", "&"))
-        .groupBy("cls")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("html"))).as("chars_in"),
-          sum(length(col("decoded"))).as("chars_out"),
-          sum("tags").as("tags_removed"),
-          sum("entities").as("entities_decoded"))
-        .withColumn("shrink_ppm",
-          expr("((chars_in - chars_out) * 1000000) DIV chars_in"))
-        .orderBy("cls")
-    }),
-
-    // Dataset datasheet — the one-row-per-source summary a corpus ships
-    // with (the "datasheets for datasets" practice): doc census, token
-    // mass and mean, language diversity (distinct + dominant via max_by
-    // over the language sub-rollup), the flagged-content rate (planted
-    // 1-in-50 md5 tier) and the short-doc tail. Two rollups + one
-    // broadcast join — the composite read every downstream consumer
-    // starts from.
-    "llm_dataset_datasheet" -> ((s, d) => {
-      val base = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
-        .withColumn("flagged", expr(
-          s"${md5Bits("tox", "doc_id", 6)} % 50") === 7L)
-      val counts = base.groupBy("source", "lang").agg(count(lit(1)).as("n"))
-      val wDom = Window.partitionBy("source")
-        .orderBy(col("n").desc, col("lang").desc)
-      val perLang = counts
-        .withColumn("rn", row_number().over(wDom)).where(col("rn") === 1)
-        .select(col("source"), col("lang").as("dominant_lang"))
-        .join(counts.groupBy("source").agg(countDistinct("lang").as("n_langs")),
-          Seq("source"))
-      base.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(expr("n_chars DIV 4")).as("token_mass"),
-          sum(when(col("flagged"), 1L).otherwise(0L)).as("flagged_docs"),
-          sum(when(col("n_chars") < 100, 1L).otherwise(0L)).as("short_docs"))
-        .withColumn("mean_tokens", expr("token_mass DIV n_docs"))
-        .withColumn("flagged_ppm", expr("(flagged_docs * 1000000) DIV n_docs"))
-        .join(broadcast(perLang), Seq("source"))
-        .orderBy("source")
-    }),
-
-    // Language rebalancing plan — the multilingual sampling policy
-    // upstream of training (English dominates every web crawl; the plan
-    // upsamples tail languages under a 3× cap so no language is ever
-    // repeated more than thrice): per language the natural share, the
-    // uniform target, the capped sampling factor in exact milli and the
-    // corpus size after resampling. One rollup + broadcast totals.
-    "llm_lang_rebalance_plan" -> ((s, d) => {
-      val byLang = Tables.documents(s, d)
-        .groupBy("lang").agg(count(lit(1)).as("docs"))
-      val tot = byLang.agg(sum("docs").as("total"),
-        count(lit(1)).as("n_langs"))
-      byLang.crossJoin(broadcast(tot))
-        .withColumn("natural_ppm", expr("(docs * 1000000) DIV total"))
-        .withColumn("target_docs", expr("total DIV n_langs"))
-        .withColumn("factor_milli",
-          least(expr("(target_docs * 1000) DIV docs"), lit(3000L)))
-        .withColumn("docs_after", expr("(docs * factor_milli) DIV 1000"))
-        .select("lang", "docs", "natural_ppm", "target_docs", "factor_milli",
-          "docs_after")
-        .orderBy("lang")
-    }),
-
-    // Composite-SLO chain availability — the SRE dependency math: four
-    // serving chains of three components each, per-component error ppm
-    // from the request log, chain availability = the EXACT product
-    // Π(1e6 − err_c) carried in DECIMAL(38,0)/HUGEINT (a 10¹⁸-scale
-    // triple product that double arithmetic would round), plus the
-    // weakest link per chain (tie-safe window). One rollup + bounded
-    // algebra — the "your SLO is the product of your dependencies'"
-    // lesson, made exact.
-    "service_composite_slo" -> ((s, d) => {
-      val comp = Tables.events(s, d)
-        .select((col("event_id") % 12).as("component"), col("event_type"))
-        .groupBy("component")
-        .agg(count(lit(1)).as("requests"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("errors"))
-        .withColumn("err_ppm", expr("(errors * 1000000) DIV requests"))
-        .withColumn("chain", expr("component DIV 3"))
-      val wWeak = Window.partitionBy("chain")
-        .orderBy(col("err_ppm").desc, col("component").desc)
-      val weak = comp.withColumn("rn", row_number().over(wWeak))
-        .where(col("rn") === 1)
-        .select(col("chain"), col("component").as("weakest_component"),
-          col("err_ppm").as("weakest_err_ppm"))
-      comp.groupBy("chain")
-        .agg(sum("requests").as("requests"),
-          expr("""CAST(
-                 |  CAST(MIN(CASE WHEN component % 3 = 0 THEN 1000000 - err_ppm END) AS DECIMAL(38,0))
-                 |  * MIN(CASE WHEN component % 3 = 1 THEN 1000000 - err_ppm END)
-                 |  * MIN(CASE WHEN component % 3 = 2 THEN 1000000 - err_ppm END)
-                 |  DIV 1000000000000 AS BIGINT)""".stripMargin)
-            .as("composite_avail_ppm"))
-        .join(broadcast(weak), Seq("chain"))
-        .orderBy("chain")
-    }),
-
-    // Difference-in-differences — the causal workhorse beside
-    // agg_stratified_ate (which adjusts a cross-section; DiD removes
-    // time-invariant confounding with a pre/post × treat/control grid):
-    // treatment by user parity, the post period opens at the corpus
-    // midpoint (broadcast bounds, so the split replays exactly), a
-    // planted +700 effect lands ONLY on treated-post (the outcome is the
-    // bounded cents-mod-1000 band so the effect dominates sampling noise
-    // at every scale). All four cell means in exact micro-units, DiD =
-    // the double difference. One
-    // conditional rollup per event type — no joins, no windows.
-    "agg_diff_in_diff" -> ((s, d) => {
-      val bounds = Tables.events(s, d)
-        .agg(min("ts_us").as("lo"), max("ts_us").as("hi"))
-      Tables.events(s, d)
-        .select(col("event_type"), col("user_id"), col("ts_us"),
-          expr("CAST(FLOOR(value * 100) AS BIGINT)").as("cents"))
-        .crossJoin(broadcast(bounds))
-        .withColumn("treated", col("user_id") % 2 === 1)
-        .withColumn("post", (col("ts_us") - col("lo")) * 2 >= col("hi") - col("lo"))
-        .withColumn("y", col("cents") % 1000 +
-          when(col("treated") && col("post"), 700L).otherwise(0L))
-        .groupBy("event_type")
-        .agg(
-          expr("(SUM(CASE WHEN treated AND post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN treated AND post THEN 1 ELSE 0 END), 0)").as("m_t_post"),
-          expr("(SUM(CASE WHEN treated AND NOT post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN treated AND NOT post THEN 1 ELSE 0 END), 0)").as("m_t_pre"),
-          expr("(SUM(CASE WHEN NOT treated AND post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN NOT treated AND post THEN 1 ELSE 0 END), 0)").as("m_c_post"),
-          expr("(SUM(CASE WHEN NOT treated AND NOT post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN NOT treated AND NOT post THEN 1 ELSE 0 END), 0)").as("m_c_pre"),
-          count(lit(1)).as("n_obs"))
-        .withColumn("did_micro",
-          (col("m_t_post") - col("m_t_pre")) - (col("m_c_post") - col("m_c_pre")))
-        .orderBy("event_type")
-    }),
-
-    // Query-fingerprint cache analysis — the DBA's statement-cache
-    // telemetry: the query log rendered from its own fields, literals
-    // normalized away by one digit-sweep regex, and the surviving
-    // TEMPLATE census per table answers "how big need the plan cache
-    // be": distinct templates, cache hit ppm (repeat executions), the
-    // hottest template's share. Per-table rollup + tie-safe hottest
-    // window.
-    "warehouse_query_fingerprint" -> ((s, d) => {
-      val q = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("value"))
-        .withColumn("tbl", concat(lit("t"), (col("event_id") % 7).cast("string")))
-        .withColumn("qtext",
-          when(col("event_id") % 3 === 0, expr(
-            "concat('SELECT v FROM ', tbl, ' WHERE user_id = ', CAST(user_id AS STRING))"))
-            .when(col("event_id") % 3 === 1, expr(
-              "concat('SELECT v FROM ', tbl, ' WHERE v > ', CAST(CAST(FLOOR(value) AS BIGINT) AS STRING))"))
-            .otherwise(expr(
-              "concat('SELECT v FROM ', tbl, ' WHERE v BETWEEN 0 AND ', CAST(CAST(FLOOR(value) AS BIGINT) AS STRING))")))
-        .withColumn("template", regexp_replace(col("qtext"), "[0-9]+", "?"))
-      val perTemplate = q.groupBy("tbl", "template")
-        .agg(count(lit(1)).as("execs"))
-      val wHot = Window.partitionBy("tbl")
-        .orderBy(col("execs").desc, col("template").desc)
-      val hottest = perTemplate.withColumn("rn", row_number().over(wHot))
-        .where(col("rn") === 1)
-        .select(col("tbl"), col("execs").as("hottest_execs"))
-      perTemplate.groupBy("tbl")
-        .agg(sum("execs").as("n_queries"),
-          count(lit(1)).as("n_templates"))
-        .withColumn("cache_hit_ppm",
-          expr("((n_queries - n_templates) * 1000000) DIV n_queries"))
-        .join(broadcast(hottest), Seq("tbl"))
-        .orderBy("tbl")
-    }),
-
-    // Cross-system row-count reconciliation — the nightly data-eng
-    // ritual: the replica silently dropped every event_id ≡ 13 mod 101
-    // (a planted CDC bug), and the per-day recon report must localize
-    // it: source vs replica counts, the per-day and cumulative missing
-    // mass, and the FIRST divergent day (where the incident review
-    // starts). One conditional rollup + one ~30-row day window.
-    "warehouse_recon_rowcounts" -> ((s, d) => {
-      val wDay = Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .select(col("event_id"), expr("ts_us DIV 86400000000").as("day"))
-        .groupBy("day")
-        .agg(count(lit(1)).as("src_n"),
-          sum(when(col("event_id") % 101 === 13, 0L).otherwise(1L)).as("rep_n"))
-        .withColumn("missing", col("src_n") - col("rep_n"))
-        .withColumn("cum_missing", sum("missing").over(wDay))
-        .withColumn("is_first_divergent",
-          col("missing") > 0L && col("cum_missing") === col("missing"))
-        .orderBy("day")
-    }),
-
-    // Failover ring plan — the multi-region capacity rehearsal: eight
-    // regions in a ring, two planted outages (regions 2 and 5), each
-    // unhealthy region fails over to the NEXT HEALTHY region clockwise
-    // (bounded ring self-join, min hop wins); graded per region: own
-    // load, failover target, the post-failover load including adopted
-    // traffic, and the headroom pressure vs the uniform mean in exact
-    // ppm — the question a failover drill must answer BEFORE the outage.
-    "service_failover_ring_plan" -> ((s, d) => {
-      val loads = Tables.events(s, d)
-        .groupBy((col("user_id") % 8).as("region"))
-        .agg(count(lit(1)).as("load"))
-        .withColumn("healthy", !col("region").isin(2L, 5L))
-        .localCheckpoint() // bounded 8 rows, reused by the ring join
-      val hops = s.range(1, 8).select(col("id").as("hop"))
-      val targets = loads.where(!col("healthy"))
-        .select(col("region").as("src"), col("load").as("moved_load"))
-        .crossJoin(hops)
-        .withColumn("cand", (col("src") + col("hop")) % 8)
-        .join(loads.where(col("healthy")).select(col("region").as("cand")),
-          Seq("cand"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("src").orderBy("hop")))
-        .where(col("rn") === 1)
-        .select(col("src"), col("cand").as("target"), col("moved_load"))
-      val adopted = targets.groupBy(col("target").as("region"))
-        .agg(sum("moved_load").as("adopted_load"))
-      val mean = loads.agg(expr("SUM(load) DIV 8").as("mean_load"))
-      loads.join(broadcast(targets.select(col("src").as("region"), col("target"))),
-          Seq("region"), "left")
-        .join(broadcast(adopted), Seq("region"), "left")
-        .na.fill(0L, Seq("adopted_load"))
-        .withColumn("post_failover_load",
-          when(col("healthy"), col("load") + col("adopted_load")).otherwise(0L))
-        .crossJoin(broadcast(mean))
-        .withColumn("pressure_ppm",
-          expr("(post_failover_load * 1000000) DIV mean_load"))
-        .select("region", "healthy", "load", "target", "post_failover_load",
-          "pressure_ppm")
-        .orderBy("region")
-    }),
-
-    // Allen's interval algebra census — the formal 13-relation
-    // classification (precedes/meets/overlaps/starts/during/finishes,
-    // their inverses, equals) over session intervals (value·3e7 µs, up
-    // to ~2.7 h, so the overlap classes actually occur at sparse and
-    // dense traffic alike), pairs BLOCKED on
-    // the (user, hour) cell exactly like mm_subtitle_align (bounded
-    // candidates, linear at any scale); the CASE ladder is exhaustive
-    // and mutually exclusive on exact µs endpoints, so the census
-    // partitions the pair set — the relationship histogram every
-    // temporal-reasoning engine is validated against.
-    "join_allen_relations" -> ((s, d) => {
-      val iv = Tables.events(s, d)
-        .select(col("user_id"), col("event_id"), col("ts_us").as("s"),
-          (col("ts_us") + expr("CAST(FLOOR(value * 30000000) AS BIGINT)")).as("e"))
-        .withColumn("hour", expr("s DIV 3600000000"))
-      val a = iv.select(col("user_id"), col("hour"), col("event_id").as("a_id"),
-        col("s").as("a_s"), col("e").as("a_e"))
-      val b = iv.select(col("user_id"), col("hour"), col("event_id").as("b_id"),
-        col("s").as("b_s"), col("e").as("b_e"))
-      val pairs = a.join(b, Seq("user_id", "hour"))
-        .where(col("a_id") < col("b_id"))
-        .withColumn("relation", expr(
-          """CASE
-            |  WHEN a_e < b_s THEN 'precedes'
-            |  WHEN b_e < a_s THEN 'preceded_by'
-            |  WHEN a_e = b_s THEN 'meets'
-            |  WHEN b_e = a_s THEN 'met_by'
-            |  WHEN a_s < b_s AND a_e < b_e THEN 'overlaps'
-            |  WHEN a_s < b_s AND a_e = b_e THEN 'finished_by'
-            |  WHEN a_s < b_s THEN 'contains'
-            |  WHEN a_s = b_s AND a_e < b_e THEN 'starts'
-            |  WHEN a_s = b_s AND a_e = b_e THEN 'equals'
-            |  WHEN a_s = b_s THEN 'started_by'
-            |  WHEN a_e < b_e THEN 'during'
-            |  WHEN a_e = b_e THEN 'finishes'
-            |  ELSE 'overlapped_by'
-            |END""".stripMargin))
-      val tot = pairs.agg(count(lit(1)).as("total"))
-      pairs.groupBy("relation").agg(count(lit(1)).as("n_pairs"))
-        .crossJoin(broadcast(tot))
-        .withColumn("share_ppm", expr("(n_pairs * 1000000) DIV total"))
-        .select("relation", "n_pairs", "share_ppm")
-        .orderBy("relation")
-    }),
-
-    // Wilson lower-bound ranking — the comment-sort classic (rank by the
-    // LOWER confidence bound, never the raw rate, so a 2/2 item cannot
-    // outrank a 95/100 one): per item the z=2 Wilson bound computed
-    // ENTIRELY in integers — LB = (ns + 2 − 2·√(ns·nf/n + 1))/(n + 4)
-    // in ppm, the root taken by the native IntSqrt expression (exact
-    // integer floor; the DuckDB twin is the corrected FLOOR(SQRT)) — and
-    // the global rank over the bounded item table. The item rollup is
-    // the only data-scaled work. phat is carried beside the bound so the
-    // small-sample demotion is visible in the graded output.
-    "agg_wilson_lower_bound" -> ((s, d) => {
-      val items = Tables.orders(s, d)
-        .groupBy((col("o_orderkey") % 100).as("item"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("ns"))
-        .withColumn("nf", col("n") - col("ns"))
-        .withColumn("phat_ppm", expr("(ns * 1000000) DIV n"))
-        .withColumn("root", expr(
-          "isqrt(((ns * nf) DIV n + 1) * 1000000000000)"))
-        .withColumn("wilson_lb_ppm", expr(
-          "(ns * 1000000 + 2000000 - 2 * root) DIV (n + 4)"))
-      items
-        .withColumn("rank_wilson", row_number().over(
-          Window.orderBy(col("wilson_lb_ppm").desc, col("item"))))
-        .select("item", "n", "ns", "phat_ppm", "wilson_lb_ppm", "rank_wilson")
-        .orderBy("item")
-    }),
-
-    // Active-learning batch selection — the labeling-ops loop: model
-    // scores in milli, uncertainty = distance from the 500 decision
-    // boundary, the next annotation batch is the 25 MOST UNCERTAIN per
-    // pool (rank window, deterministic ties); graded per pool: the
-    // selected batch's mean uncertainty vs the pool's — the gap that
-    // justifies active over random labeling. One rank window + one
-    // rollup.
-    "llm_active_label_selection" -> ((s, d) => {
-      val wU = Window.partitionBy("source")
-        .orderBy(col("uncertainty"), col("doc_id"))
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"))
-        .withColumn("score_milli", expr(
-          s"${md5Bits("al", "doc_id", 6)} % 1000"))
-        .withColumn("uncertainty", abs(col("score_milli") - 500L))
-        .withColumn("selected", row_number().over(wU) <= 25)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_candidates"),
-          sum(when(col("selected"), 1L).otherwise(0L)).as("n_selected"),
-          sum(when(col("selected"), col("uncertainty")).otherwise(0L))
-            .as("sel_uncertainty_mass"),
-          sum("uncertainty").as("pool_uncertainty_mass"))
-        .withColumn("mean_sel_unc_milli",
-          expr("sel_uncertainty_mass DIV n_selected"))
-        .withColumn("mean_pool_unc_milli",
-          expr("pool_uncertainty_mass DIV n_candidates"))
-        .orderBy("source")
-    }),
-
-    // Daily-activity streaks — the engagement metric every consumer
-    // product reports: per user the DISTINCT active days collapse into
-    // consecutive-day islands (day − row_number, the gaps-and-islands
-    // identity on the calendar axis), longest streak per user, then per
-    // principal cohort: users, the record streak, streak mass, and the
-    // ≥ 7-day power-user census. Distinct-day rollup + user window +
-    // cohort rollup.
-    "win_activity_streaks" -> ((s, d) => {
-      val wDay = Window.partitionBy("user_id").orderBy("day")
-      val streaks = Tables.events(s, d)
-        .select(col("user_id"), expr("ts_us DIV 86400000000").as("day"))
-        .distinct()
-        .withColumn("island", col("day") - row_number().over(wDay))
-        .groupBy("user_id", "island")
-        .agg(count(lit(1)).as("len"))
-        .groupBy("user_id")
-        .agg(max("len").as("longest"), count(lit(1)).as("n_streaks"),
-          sum("len").as("active_days"))
-      streaks.groupBy((col("user_id") % 8).as("principal"))
-        .agg(count(lit(1)).as("n_users"),
-          max("longest").as("record_streak"),
-          sum("longest").as("longest_mass"),
-          sum("active_days").as("active_day_mass"),
-          sum(when(col("longest") >= 7L, 1L).otherwise(0L)).as("power_users"))
-        .withColumn("power_ppm", expr("(power_users * 1000000) DIV n_users"))
-        .orderBy("principal")
-    }),
-
-    // ISO-8601 duration round-trip — the API serialization gate (PnDTnHnMnS
-    // is how a person-service wire carries intervals): durations rendered
-    // from exact integer seconds, re-parsed by anchored regexp_extract,
-    // and the graded round-trip (zero mismatches, seconds mass conserved)
-    // is a proof over the whole log. Pure integer/string surgery, both
-    // engines codegen'd.
-    "fn_iso8601_duration" -> ((s, d) => {
-      Tables.events(s, d)
-        .select(col("event_type"),
-          expr("CAST(FLOOR(value * 1000) AS BIGINT)").as("secs"))
-        .withColumn("iso", expr(
-          """concat('P', CAST(secs DIV 86400 AS STRING), 'DT',
-            |  CAST(secs % 86400 DIV 3600 AS STRING), 'H',
-            |  CAST(secs % 3600 DIV 60 AS STRING), 'M',
-            |  CAST(secs % 60 AS STRING), 'S')""".stripMargin))
-        .withColumn("parsed", expr(
-          """CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 1) AS BIGINT) * 86400
-            |+ CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 2) AS BIGINT) * 3600
-            |+ CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 3) AS BIGINT) * 60
-            |+ CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 4) AS BIGINT)"""
-            .stripMargin))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("parsed") =!= col("secs"), 1L).otherwise(0L))
-            .as("mismatches"),
-          sum("secs").as("seconds_mass"),
-          max(expr("secs DIV 86400")).as("max_days"))
-        .withColumn("roundtrip_exact", col("mismatches") === 0L)
-        .orderBy("event_type")
-    }),
-
-    // SRT timecode round-trip — the subtitle-file serialization beside
-    // mm_subtitle_align: millisecond offsets rendered as the fixed-width
-    // HH:MM:SS,mmm cue stamp, re-parsed by position, round-trip proven;
-    // and because the rendering is FIXED-WIDTH, lexicographic MAX equals
-    // the numeric max — the graded `lex_is_numeric_max` column proves the
-    // property subtitle tooling silently relies on when sorting cue
-    // files as text (the same property fn_semver_latest proves violated
-    // for variable-width versions).
-    "mm_srt_timecode" -> ((s, d) => {
-      Tables.events(s, d)
-        .select((col("user_id") % 8).as("principal"),
-          expr("CAST(FLOOR(value * 100000) AS BIGINT) % 86400000").as("ms"))
-        .withColumn("tc", expr(
-          """concat(lpad(CAST(ms DIV 3600000 AS STRING), 2, '0'), ':',
-            |  lpad(CAST(ms % 3600000 DIV 60000 AS STRING), 2, '0'), ':',
-            |  lpad(CAST(ms % 60000 DIV 1000 AS STRING), 2, '0'), ',',
-            |  lpad(CAST(ms % 1000 AS STRING), 3, '0'))""".stripMargin))
-        .withColumn("parsed", expr(
-          """CAST(substring(tc, 1, 2) AS BIGINT) * 3600000
-            |+ CAST(substring(tc, 4, 2) AS BIGINT) * 60000
-            |+ CAST(substring(tc, 7, 2) AS BIGINT) * 1000
-            |+ CAST(substring(tc, 10, 3) AS BIGINT)""".stripMargin))
-        .groupBy("principal")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("parsed") =!= col("ms"), 1L).otherwise(0L))
-            .as("mismatches"),
-          max("ms").as("max_ms"), max("tc").as("lex_max_tc"))
-        .withColumn("lex_is_numeric_max", expr(
-          """lex_max_tc = concat(lpad(CAST(max_ms DIV 3600000 AS STRING), 2, '0'), ':',
-            |  lpad(CAST(max_ms % 3600000 DIV 60000 AS STRING), 2, '0'), ':',
-            |  lpad(CAST(max_ms % 60000 DIV 1000 AS STRING), 2, '0'), ',',
-            |  lpad(CAST(max_ms % 1000 AS STRING), 3, '0'))""".stripMargin))
-        .orderBy("principal")
-    }),
-
-    // RFM segment-migration matrix — the CRM follow-on to agg_rfm (which
-    // scores ONE period; retention marketing lives on the TRANSITIONS):
-    // customers tiered by spend in each half of the order history
-    // (1995–97 vs 1998+), the full-outer join yields the migration
-    // matrix with 'absent' pseudo-tiers for churned and newly-acquired
-    // customers; census per (from, to) cell with share ppm — the
-    // movement report a lifecycle team acts on.
-    "agg_segment_migration" -> ((s, d) => {
-      def half(pred: org.apache.spark.sql.Column) = Tables.orders(s, d)
-        .where(pred)
-        .groupBy("o_custkey")
-        .agg(sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
-        .withColumn("tier",
-          when(col("cents") >= 30000000L, lit("high"))
-            .when(col("cents") >= 15000000L, lit("mid")).otherwise(lit("low")))
-      val p1 = half(col("o_orderdate") < "1998-01-01")
-        .select(col("o_custkey"), col("tier").as("tier_from"))
-      val p2 = half(col("o_orderdate") >= "1998-01-01")
-        .select(col("o_custkey"), col("tier").as("tier_to"))
-      val m = p1.join(p2, Seq("o_custkey"), "full")
-        .select(coalesce(col("tier_from"), lit("absent")).as("tier_from"),
-          coalesce(col("tier_to"), lit("absent")).as("tier_to"))
-      val tot = m.agg(count(lit(1)).as("total"))
-      m.groupBy("tier_from", "tier_to").agg(count(lit(1)).as("customers"))
-        .crossJoin(broadcast(tot))
-        .withColumn("share_ppm", expr("(customers * 1000000) DIV total"))
-        .select("tier_from", "tier_to", "customers", "share_ppm")
-        .orderBy("tier_from", "tier_to")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    "service_concurrent_sessions" ->
-      """WITH sess AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(FLOOR(value * 1000000) AS BIGINT) AS dur_us
-        |  FROM events),
-        |marks AS (
-        |  SELECT user_id, event_id, ts_us AS t, CAST(1 AS BIGINT) AS delta FROM sess
-        |  UNION ALL
-        |  SELECT user_id, event_id, ts_us + dur_us, CAST(-1 AS BIGINT) FROM sess),
-        |sw AS (
-        |  SELECT user_id, delta,
-        |    SUM(delta) OVER (PARTITION BY user_id
-        |      ORDER BY t, delta DESC, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS live
-        |  FROM marks)
-        |SELECT user_id % 8 AS principal,
-        |  CAST(COUNT(*) // 2 AS BIGINT) AS n_sessions,
-        |  CAST(MAX(live) AS BIGINT) AS peak_concurrent,
-        |  CAST(SUM(CASE WHEN delta = 1 AND live >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS overlapping_starts,
-        |  (CAST(SUM(CASE WHEN delta = 1 AND live >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    * 1000000) // (CAST(COUNT(*) AS BIGINT) // 2) AS overlap_ppm
-        |FROM sw GROUP BY 1 ORDER BY principal""".stripMargin,
-
-    "service_ab_exposure_integrity" ->
-      s"""WITH e AS (
-        |  SELECT user_id, event_id, event_id % 3 AS flag,
-        |    ${duckMd5Bits("CAST(user_id AS VARCHAR) || ':f' || CAST(event_id % 3 AS VARCHAR)", 6)} % 2 AS assigned
-        |  FROM events),
-        |seen AS (
-        |  SELECT flag, user_id,
-        |    CASE WHEN event_id % 97 = 13 THEN 1 - assigned ELSE assigned END AS seen
-        |  FROM e),
-        |pu AS (
-        |  SELECT flag, user_id, CAST(COUNT(*) AS BIGINT) AS events,
-        |    CAST(COUNT(DISTINCT seen) AS BIGINT) AS variants_seen
-        |  FROM seen GROUP BY 1, 2)
-        |SELECT flag, CAST(COUNT(*) AS BIGINT) AS exposed_users,
-        |  CAST(SUM(CASE WHEN variants_seen >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS contaminated_users,
-        |  CAST(SUM(events) AS BIGINT) AS exposure_events,
-        |  (CAST(SUM(CASE WHEN variants_seen >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    * 1000000) // CAST(COUNT(*) AS BIGINT) AS contamination_ppm
-        |FROM pu GROUP BY 1 ORDER BY flag""".stripMargin,
-
-    "llm_context_growth_plan" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CAST(FLOOR(value) AS BIGINT) + 10 AS turn_tokens
-        |  FROM events),
-        |w AS (
-        |  SELECT user_id, turn_tokens,
-        |    SUM(turn_tokens) OVER win AS cum_tokens,
-        |    CAST(ROW_NUMBER() OVER win AS INT) AS turn_idx
-        |  FROM t WINDOW win AS (PARTITION BY user_id ORDER BY ts_us, event_id))
-        |SELECT user_id % 8 AS principal, CAST(COUNT(*) AS BIGINT) AS n_turns,
-        |  CAST(SUM(turn_tokens) AS BIGINT) AS token_mass,
-        |  CAST(MIN(CASE WHEN cum_tokens > 4096 THEN turn_idx END) AS INT)
-        |    AS first_overflow_turn,
-        |  CAST(SUM(CASE WHEN cum_tokens > 4096 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS overflow_turns,
-        |  (CAST(SUM(CASE WHEN cum_tokens > 4096 THEN 1 ELSE 0 END) AS BIGINT)
-        |    * 1000000) // CAST(COUNT(*) AS BIGINT) AS overflow_ppm
-        |FROM w GROUP BY 1 ORDER BY principal""".stripMargin,
-
-    "join_band_bucketed" ->
-      """WITH o AS (
-        |  SELECT o_orderkey AS k, o_orderpriority AS prio,
-        |    CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS c,
-        |    CAST(FLOOR(o_totalprice * 100) AS BIGINT) // 100 AS bucket
-        |  FROM orders),
-        |probe AS (
-        |  SELECT k AS ka, prio, c AS ca, bucket + off.off AS bucket
-        |  FROM o CROSS JOIN (SELECT UNNEST([-1, 0, 1]) AS off) off),
-        |j AS (
-        |  SELECT probe.prio, ca, cb,
-        |    abs(ca - cb) <= 100 AS in_band
-        |  FROM probe JOIN (SELECT k AS kb, prio, c AS cb, bucket FROM o) b
-        |    ON probe.prio = b.prio AND probe.bucket = b.bucket
-        |  WHERE probe.ka < b.kb)
-        |SELECT prio, CAST(COUNT(*) AS BIGINT) AS candidate_pairs,
-        |  CAST(SUM(CASE WHEN in_band THEN 1 ELSE 0 END) AS BIGINT) AS band_pairs,
-        |  CAST(MIN(CASE WHEN in_band THEN abs(ca - cb) END) AS BIGINT)
-        |    AS tightest_diff_cents,
-        |  (CAST(SUM(CASE WHEN in_band THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
-        |    // CAST(COUNT(*) AS BIGINT) AS survival_ppm
-        |FROM j GROUP BY 1 ORDER BY prio""".stripMargin,
-
-    "fn_money_parse_locale" ->
+    },
       """WITH b AS (
         |  SELECT o_orderkey, CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS cents,
         |    CAST(FLOOR(o_totalprice * 100) AS BIGINT) // 100 AS d,
@@ -1428,9 +295,42 @@ object Round13cOps extends Family {
         |  CAST(SUM(CASE WHEN parsed_cents <> cents THEN 1 ELSE 0 END) AS BIGINT)
         |    AS mismatches,
         |  SUM(CASE WHEN parsed_cents <> cents THEN 1 ELSE 0 END) = 0 AS roundtrip_exact
-        |FROM p GROUP BY 1 ORDER BY cls""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY cls""".stripMargin),
 
-    "warehouse_access_recert" ->
+    // Access recertification — the quarterly governance sweep over the
+    // grant matrix (warehouse_grants declares WHO may; this op audits
+    // whether they still DO): a bounded principal×object grant matrix
+    // joined against last-use telemetry from the event log; grants never
+    // used revoke immediately, grants idle past 30 days (vs the corpus
+    // high-water mark, so the audit replays exactly) go to the recert
+    // queue. Per principal cohort: grants, active, stale, never-used,
+    // revoke-candidate ppm. Usage rollup is the only data-scaled work;
+    // the matrix side is broadcast.
+    Op("warehouse_access_recert", (s, d) => {
+      val grants = s.range(16).select(col("id").as("p"))
+        .crossJoin(s.range(10).select(col("id").as("o")))
+        .where((col("p") + col("o")) % 3 =!= 1)
+      val usage = Tables.events(s, d)
+        .select((col("user_id") % 16).as("p"), (col("event_id") % 10).as("o"),
+          col("ts_us"))
+        .groupBy("p", "o").agg(max("ts_us").as("last_use"))
+      val hwm = Tables.events(s, d).agg(max("ts_us").as("hwm"))
+      usage.join(broadcast(grants), Seq("p", "o"), "right")
+        .crossJoin(broadcast(hwm))
+        .withColumn("status",
+          when(col("last_use").isNull, lit("never_used"))
+            .when(col("hwm") - col("last_use") > 2592000000000L, lit("stale"))
+            .otherwise(lit("active")))
+        .groupBy((col("p") % 4).as("cohort"))
+        .agg(count(lit(1)).as("n_grants"),
+          sum(when(col("status") === "active", 1L).otherwise(0L)).as("active"),
+          sum(when(col("status") === "stale", 1L).otherwise(0L)).as("stale"),
+          sum(when(col("status") === "never_used", 1L).otherwise(0L))
+            .as("never_used"))
+        .withColumn("revoke_ppm",
+          expr("((stale + never_used) * 1000000) DIV n_grants"))
+        .orderBy("cohort")
+    },
       """WITH grants AS (
         |  SELECT p.range AS p, o.range AS o
         |  FROM range(0, 16) p CROSS JOIN range(0, 10) o
@@ -1453,9 +353,49 @@ object Round13cOps extends Family {
         |  CAST(SUM(CASE WHEN status = 'never_used' THEN 1 ELSE 0 END) AS BIGINT) AS never_used,
         |  (CAST(SUM(CASE WHEN status IN ('stale', 'never_used') THEN 1 ELSE 0 END) AS BIGINT)
         |    * 1000000) // CAST(COUNT(*) AS BIGINT) AS revoke_ppm
-        |FROM st GROUP BY 1 ORDER BY cohort""".stripMargin,
+        |FROM st GROUP BY 1 ORDER BY cohort""".stripMargin),
 
-    "fn_jwt_parse" ->
+    // JWT claims parsing + expiry validation — the auth gate in front of
+    // every person-service endpoint: tokens carry a base64url payload
+    // (fixture-minted from the event's own fields, padding stripped like
+    // real JWTs); the parser re-pads, maps the url alphabet back to
+    // base64, decodes, and extracts claims by JSON path; a token is
+    // EXPIRED when its exp claim sits at or before the corpus
+    // high-water second (exact integer compare). Per scope: tokens,
+    // expired + ppm, distinct subjects. All codegen'd string/JSON
+    // builtins — no UDF.
+    Op("fn_jwt_parse", (s, d) => {
+      val hwm = Tables.events(s, d)
+        .agg(expr("MAX(ts_us DIV 1000000)").as("now_sec"))
+      val minted = Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          expr("ts_us DIV 1000000").as("ts_sec"),
+          expr("CAST(FLOOR(value) AS BIGINT)").as("v"))
+        .withColumn("payload", concat(lit("{\"sub\":\"u"),
+          col("user_id").cast("string"), lit("\",\"exp\":"),
+          (col("ts_sec") + col("v") * 10000L).cast("string"),
+          lit(",\"scope\":\""), col("event_type"), lit("\"}")))
+        .withColumn("token", concat(lit("eyJhbGciOiJIUzI1NiJ9."),
+          regexp_replace(translate(expr("base64(CAST(payload AS BINARY))"),
+            "+/", "-_"), "=", ""), lit(".sig")))
+      minted
+        .withColumn("p64", expr("split(token, '\\\\.')[1]"))
+        .withColumn("p64pad", concat(col("p64"),
+          expr("repeat('=', (4 - length(p64) % 4) % 4)")))
+        .withColumn("claims",
+          expr("CAST(unbase64(translate(p64pad, '-_', '+/')) AS STRING)"))
+        .withColumn("sub", expr("get_json_object(claims, '$.sub')"))
+        .withColumn("exp", expr("CAST(get_json_object(claims, '$.exp') AS BIGINT)"))
+        .withColumn("scope", expr("get_json_object(claims, '$.scope')"))
+        .crossJoin(broadcast(hwm))
+        .withColumn("expired", col("exp") <= col("now_sec"))
+        .groupBy("scope")
+        .agg(count(lit(1)).as("n_tokens"),
+          sum(when(col("expired"), 1L).otherwise(0L)).as("n_expired"),
+          countDistinct("sub").as("n_subjects"))
+        .withColumn("expired_ppm", expr("(n_expired * 1000000) DIV n_tokens"))
+        .orderBy("scope")
+    },
       """WITH hwm AS (SELECT MAX(epoch_us(ts) // 1000000) AS now_sec FROM events),
         |minted AS (
         |  SELECT user_id, event_type,
@@ -1487,9 +427,36 @@ object Round13cOps extends Family {
         |  (CAST(SUM(CASE WHEN exp <= (SELECT now_sec FROM hwm)
         |    THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS expired_ppm
-        |FROM c GROUP BY 1 ORDER BY scope""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY scope""".stripMargin),
 
-    "llm_gpu_packing_plan" ->
+    // GPU bin-packing plan — the training-cluster capacity question: jobs
+    // (memory demand from doc size) packed pool-by-pool in size-DESC
+    // order onto 80 GB nodes by contiguous cumulative allocation; a job
+    // whose span crosses a node boundary pays a migration (the straddler
+    // census — the cost of NOT solving true bin packing, reported
+    // honestly). Per pool: jobs, memory mass, nodes used (= the ceil
+    // lower bound under contiguous allocation), straddlers + ppm, and
+    // node utilization ppm. One pool-partitioned cumsum window + rollup.
+    Op("llm_gpu_packing_plan", (s, d) => {
+      val wp = Window.partitionBy("pool")
+        .orderBy(col("mem_gb").desc, col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source").as("pool"),
+          (expr("n_chars DIV 100") + 1L).as("mem_gb"))
+        .withColumn("cum", sum("mem_gb").over(wp))
+        .withColumn("straddle",
+          when(expr("(cum - 1) DIV 80") =!= expr("(cum - mem_gb) DIV 80"), 1L)
+            .otherwise(0L))
+        .groupBy("pool")
+        .agg(count(lit(1)).as("n_jobs"), sum("mem_gb").as("mem_total_gb"),
+          expr("(MAX(cum) + 79) DIV 80").as("nodes_used"),
+          sum("straddle").as("straddlers"))
+        .withColumn("straddle_ppm", expr("(straddlers * 1000000) DIV n_jobs"))
+        .withColumn("utilization_ppm",
+          expr("(mem_total_gb * 1000000) DIV (nodes_used * 80)"))
+        .orderBy("pool")
+    },
       """WITH j AS (
         |  SELECT doc_id, source AS pool, n_chars // 100 + 1 AS mem_gb
         |  FROM documents),
@@ -1511,9 +478,31 @@ object Round13cOps extends Family {
         |    AS straddle_ppm,
         |  (CAST(SUM(mem_gb) AS BIGINT) * 1000000)
         |    // (CAST((MAX(cum) + 79) // 80 AS BIGINT) * 80) AS utilization_ppm
-        |FROM st GROUP BY 1 ORDER BY pool""".stripMargin,
+        |FROM st GROUP BY 1 ORDER BY pool""".stripMargin),
 
-    "agg_dormancy_reactivation" ->
+    // Dormancy → reactivation census — the growth-analytics counterpart
+    // of agg_cohort_retention (retention asks who stays; this asks who
+    // COMES BACK): a user event after a > 7-day silence is a
+    // reactivation; graded per calendar week: active users, reactivated
+    // users, events, reactivation ppm — the resurrection curve a growth
+    // team plots. One user-partitioned lag + one week rollup.
+    Op("agg_dormancy_reactivation", (s, d) => {
+      val wu = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"))
+        .withColumn("gap_us", col("ts_us") - lag("ts_us", 1).over(wu))
+        .withColumn("reactivated",
+          when(col("gap_us") > 604800000000L, 1L).otherwise(0L))
+        .groupBy(expr("ts_us DIV 604800000000").as("week"))
+        .agg(countDistinct("user_id").as("active_users"),
+          count(lit(1)).as("n_events"),
+          sum("reactivated").as("reactivations"),
+          countDistinct(when(col("reactivated") === 1L, col("user_id")))
+            .as("reactivated_users"))
+        .withColumn("reactivation_ppm",
+          expr("(reactivated_users * 1000000) DIV active_users"))
+        .orderBy("week")
+    },
       """WITH g AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
         |    epoch_us(ts) - LAG(epoch_us(ts)) OVER
@@ -1530,9 +519,48 @@ object Round13cOps extends Family {
         |    AS reactivated_users,
         |  (CAST(COUNT(DISTINCT CASE WHEN reactivated = 1 THEN user_id END) AS BIGINT)
         |    * 1000000) // CAST(COUNT(DISTINCT user_id) AS BIGINT) AS reactivation_ppm
-        |FROM r GROUP BY 1 ORDER BY week""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY week""".stripMargin),
 
-    "join_ip_range_lookup" ->
+    // IP-range lookup join — the classic geo/ASN enrich that a naive
+    // planner executes as a range-predicate cartesian: the range dim
+    // (256 /8 blocks, each split at a planted offset into two owners) is
+    // BUCKETED at /8 granularity so the probe joins on an exact equi-key
+    // (ip DIV 2²⁴) and only the in-bucket containment check remains —
+    // the range join becomes one broadcast equi-join at any traffic
+    // volume. Per owner class: lookups, matched, unmatched (the planted
+    // reserved blocks), match ppm.
+    Op("join_ip_range_lookup", (s, d) => {
+      val ranges = s.range(256).select(col("id").as("block"))
+        .withColumn("split_at", expr(
+          s"${md5Bits("ip", "block", 6)} % 16777216"))
+        .select(
+          struct(col("block"), (col("block") * 16777216L).as("lo"),
+            (col("block") * 16777216L + col("split_at")).as("hi"),
+            concat(lit("as"), (col("block") % 5).cast("string")).as("owner")).as("r"))
+        .unionByName(s.range(256).select(col("id").as("block"))
+          .withColumn("split_at", expr(
+            s"${md5Bits("ip", "block", 6)} % 16777216"))
+          .where(col("block") % 8 =!= 3) // every 8th block's upper half is reserved
+          .select(struct(col("block"),
+            (col("block") * 16777216L + col("split_at")).as("lo"),
+            ((col("block") + 1) * 16777216L).as("hi"),
+            concat(lit("as"), ((col("block") + 2) % 5).cast("string")).as("owner")).as("r")))
+        .select(col("r.block").as("block"), col("r.lo").as("lo"),
+          col("r.hi").as("hi"), col("r.owner").as("owner"))
+      val probes = Tables.events(s, d)
+        .select(col("event_id"), expr(
+          s"${md5Bits("addr", "event_id", 8)} % 4294967296").as("ip"))
+        .withColumn("block", expr("ip DIV 16777216"))
+      probes.join(broadcast(ranges), Seq("block"), "left")
+        .withColumn("hit",
+          when(col("ip") >= col("lo") && col("ip") < col("hi"), 1L).otherwise(0L))
+        .groupBy("event_id", "ip")
+        .agg(max(when(col("hit") === 1L, col("owner"))).as("owner"))
+        .groupBy(coalesce(col("owner"), lit("unrouted")).as("owner"))
+        .agg(count(lit(1)).as("n_lookups"))
+        .withColumn("routed", col("owner") =!= "unrouted")
+        .orderBy("owner")
+    },
       s"""WITH blocks AS (
         |  SELECT b.range AS block,
         |    ${duckMd5Bits("ip", "b.range", 6)}
@@ -1561,9 +589,44 @@ object Round13cOps extends Family {
         |SELECT COALESCE(owner, 'unrouted') AS owner,
         |  CAST(COUNT(*) AS BIGINT) AS n_lookups,
         |  COALESCE(owner, 'unrouted') <> 'unrouted' AS routed
-        |FROM m GROUP BY 1 ORDER BY owner""".stripMargin,
+        |FROM m GROUP BY 1 ORDER BY owner""".stripMargin),
 
-    "llm_split_leakage_audit" ->
+    // Train/test split-leakage audit — the contamination check BETWEEN
+    // llm_dedup_* (which dedups one corpus) and llm_decontam_ngram
+    // (which screens against a known eval set): docs hash-split 90/10
+    // into train/test, near-dup clusters keyed by a fingerprint (planted
+    // pairs: every doc_id ≡ 1 mod 6 clusters with its predecessor — the
+    // dedup stage's output, consumed here as the cluster key), and any
+    // cluster spanning BOTH sides leaks test signal into training. Per
+    // source:
+    // clusters, leaking clusters, test docs, tainted test docs + ppm
+    // (the fraction of the eval set whose score is untrustworthy). Two
+    // rollups over one scan.
+    Op("llm_split_leakage_audit", (s, d) => {
+      val split = Tables.documents(s, d)
+        .select(col("doc_id"), col("source"),
+          expr("""md5(concat('fp:', CAST(doc_id -
+                 |  (CASE WHEN doc_id % 6 = 1 THEN 1 ELSE 0 END) AS STRING)))"""
+            .stripMargin).as("fp"))
+        .withColumn("side", when(expr(
+          s"${md5Bits("split", "doc_id", 6)} % 10") === 7,
+          lit("test")).otherwise(lit("train")))
+      val clusters = split.groupBy("fp")
+        .agg(expr("min_by(source, doc_id)").as("source"),
+          sum(when(col("side") === "train", 1L).otherwise(0L)).as("train_docs"),
+          sum(when(col("side") === "test", 1L).otherwise(0L)).as("test_docs"))
+        .withColumn("leaks", col("train_docs") > 0L && col("test_docs") > 0L)
+      clusters.groupBy("source")
+        .agg(count(lit(1)).as("n_clusters"),
+          sum(when(col("leaks"), 1L).otherwise(0L)).as("leaking_clusters"),
+          sum("test_docs").as("test_docs"),
+          sum(when(col("leaks"), col("test_docs")).otherwise(0L))
+            .as("tainted_test_docs"))
+        .withColumn("taint_ppm",
+          when(col("test_docs") > 0L,
+            expr("(tainted_test_docs * 1000000) DIV test_docs")).otherwise(0L))
+        .orderBy("source")
+    },
       s"""WITH sp AS (
         |  SELECT doc_id, source,
         |    md5('fp:' || CAST(doc_id -
@@ -1585,9 +648,28 @@ object Round13cOps extends Family {
         |    (CAST(SUM(CASE WHEN leaks THEN test_docs ELSE 0 END) AS BIGINT) * 1000000)
         |      // CAST(SUM(test_docs) AS BIGINT)
         |  ELSE 0 END AS taint_ppm
-        |FROM lk GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM lk GROUP BY 1 ORDER BY source""".stripMargin),
 
-    "fn_consent_bitmask_decode" ->
+    // Consent bitmask decode — the ad-tech/privacy purpose-string gate
+    // (TCF-style): each user carries a 12-purpose consent bitmask; the
+    // decoder explodes the bounded purpose axis and tests bits by shift
+    // — a 12× fixed fan-out, linear at any scale. Planted: purpose 3 is
+    // universally denied (masked off), purpose 0 universally granted.
+    // Per purpose: users, granted + ppm — the audience-size readout a
+    // consent-management platform serves.
+    Op("fn_consent_bitmask_decode", (s, d) => {
+      val masks = Tables.customer(s, d)
+        .select(col("c_custkey"),
+          (expr(s"${md5Bits("cm", "c_custkey", 4)} % 4096")
+            .bitwiseOR(lit(1L))).bitwiseAND(lit(4087L)).as("mask"))
+      masks
+        .withColumn("purpose", explode(expr("sequence(0, 11)")))
+        .withColumn("granted", expr("shiftright(mask, purpose) % 2"))
+        .groupBy("purpose")
+        .agg(count(lit(1)).as("n_users"), sum("granted").as("n_granted"))
+        .withColumn("grant_ppm", expr("(n_granted * 1000000) DIV n_users"))
+        .orderBy("purpose")
+    },
       s"""WITH m AS (
         |  SELECT c_custkey,
         |    ((${duckMd5Bits("cm", "c_custkey", 4)}
@@ -1600,9 +682,37 @@ object Round13cOps extends Family {
         |  CAST(SUM((mask >> CAST(purpose AS INT)) % 2) AS BIGINT) AS n_granted,
         |  (CAST(SUM((mask >> CAST(purpose AS INT)) % 2) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS grant_ppm
-        |FROM e GROUP BY 1 ORDER BY purpose""".stripMargin,
+        |FROM e GROUP BY 1 ORDER BY purpose""".stripMargin),
 
-    "mm_playback_qoe" ->
+    // Playback QoE rollup — the streaming-video telemetry triple every
+    // player team tracks: per (user, day) viewing session the bitrate
+    // ladder rung is md5-assigned per event, SWITCHES are lag-detected
+    // rung changes (the instability cost), REBUFFERS are the error
+    // events; the session QoE in exact milli = 1000 − rebuffer-rate
+    // penalty − half the switch rate. One session-partitioned lag + two
+    // rollups; everything integer.
+    Op("mm_playback_qoe", (s, d) => {
+      val wSess = Window.partitionBy("user_id", "day").orderBy("ts_us", "event_id")
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
+        .withColumn("day", expr("ts_us DIV 86400000000"))
+        .withColumn("rung", expr(
+          s"element_at(array(240, 360, 480, 720, 1080), CAST(${md5Bits("br", "event_id", 4)} % 5 AS INT) + 1)"))
+        .withColumn("switched",
+          when(col("rung") =!= lag("rung", 1).over(wSess), 1L).otherwise(0L))
+        .withColumn("rebuffer",
+          when(col("event_type") === "error", 1L).otherwise(0L))
+        .groupBy((col("user_id") % 8).as("principal"))
+        .agg(countDistinct("user_id", "day").as("n_sessions"),
+          count(lit(1)).as("n_events"),
+          sum("switched").as("switches"),
+          sum("rebuffer").as("rebuffers"),
+          sum("rung").as("rung_mass"))
+        .withColumn("mean_rung", expr("rung_mass DIV n_events"))
+        .withColumn("qoe_milli", expr(
+          "1000 - (rebuffers * 1000) DIV n_events - (switches * 500) DIV n_events"))
+        .orderBy("principal")
+    },
       s"""WITH ev AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type,
         |    epoch_us(ts) // 86400000000 AS day,
@@ -1624,9 +734,42 @@ object Round13cOps extends Family {
         |  1000 - (CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)
         |    * 1000) // CAST(COUNT(*) AS BIGINT)
         |  - (CAST(SUM(switched) AS BIGINT) * 500) // CAST(COUNT(*) AS BIGINT) AS qoe_milli
-        |FROM l GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM l GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "warehouse_tag_propagation" ->
+    // PII tag propagation through lineage — the governance closure every
+    // catalog runs (tag the sources, and every derived table downstream
+    // inherits the tag): a bounded 20-table lineage DAG (edges strictly
+    // increasing, so it IS a DAG), PII seeded on the three ingest tables.
+    // The ≤4-hop closure is built in ONE plan — walks of length 0..4 via
+    // chained self-joins of the 20-row edge table (≤48 walks total), then
+    // min-hop per table = the BFS level. The r13 shape ran four
+    // SEQUENTIAL frontier anti-join job waves and paid ~8 calib-units of
+    // pure stage-scheduling latency for 20 rows of metadata (VERDICT r13
+    // item 5); one declarative plan schedules once.
+    Op("warehouse_tag_propagation", (s, d) => {
+      def tables = s.range(20).select(col("id").as("t"))
+      def edges = tables.select(col("t").as("src"), (col("t") + 3).as("dst"))
+        .where(col("dst") < 20)
+        .unionByName(tables.where(col("t") % 2 === 0)
+          .select(col("t").as("src"), (col("t") + 5).as("dst"))
+          .where(col("dst") < 20))
+      def step(w: DataFrame, h: Int): DataFrame = {
+        val e = edges
+        w.join(e, w("n") === e("src")).select(col("dst").as("n"), lit(h).as("hop"))
+      }
+      val w0 = tables.where(col("t") <= 2)
+        .select(col("t").as("n"), lit(0).as("hop"))
+      val w1 = step(w0, 1); val w2 = step(w1, 2)
+      val w3 = step(w2, 3); val w4 = step(w3, 4)
+      val tagged = w0.unionByName(w1).unionByName(w2).unionByName(w3)
+        .unionByName(w4)
+        .groupBy(col("n").as("t")).agg(min("hop").as("hop"))
+      tagged.groupBy("hop")
+        .agg(count(lit(1)).as("newly_tagged"),
+          expr("array_join(sort_array(collect_list(CAST(t AS STRING))), ',')")
+            .as("tables_csv"))
+        .orderBy("hop")
+    },
       """WITH tables AS (SELECT range AS t FROM range(0, 20)),
         |edges AS (
         |  SELECT t AS src, t + 3 AS dst FROM tables WHERE t + 3 < 20
@@ -1652,9 +795,46 @@ object Round13cOps extends Family {
         |  UNION ALL SELECT t, 4 FROM f4)
         |SELECT CAST(hop AS INT) AS hop, CAST(COUNT(*) AS BIGINT) AS newly_tagged,
         |  string_agg(CAST(t AS VARCHAR), ',' ORDER BY CAST(t AS VARCHAR)) AS tables_csv
-        |FROM tagged GROUP BY 1 ORDER BY hop""".stripMargin,
+        |FROM tagged GROUP BY 1 ORDER BY hop""".stripMargin),
 
-    "service_saga_audit" ->
+    // Saga compensation audit — the distributed-transaction ledger check
+    // for a microservice person-store: the request log as 6-step sagas;
+    // a quarter of sagas fail at an md5-chosen step, and every executed
+    // step of a failed saga must log a compensation in reverse — except
+    // the planted txn ≡ 3 mod 19 class, which lost one (the dangling
+    // side-effect an auditor hunts). Per shard: sagas, failed, fully
+    // compensated, missing-compensation count + ppm, and the orphaned
+    // step mass. One rollup over the txn grouping.
+    Op("service_saga_audit", (s, d) => {
+      Tables.events(s, d)
+        .select(expr("event_id DIV 6").as("txn"))
+        .groupBy("txn")
+        .agg(count(lit(1)).as("observed_steps"))
+        .withColumn("h", expr(
+          md5Bits("saga", "txn", 6)))
+        .withColumn("failed", col("h") % 4 === 0)
+        .withColumn("fail_at", when(col("failed"), col("h") % 6 + 1))
+        .withColumn("executed",
+          when(col("failed"), least(col("observed_steps"), col("fail_at") - 1))
+            .otherwise(col("observed_steps")))
+        .withColumn("compensations",
+          when(!col("failed"), lit(0L))
+            .when(col("txn") % 19 === 3, greatest(col("executed") - 1, lit(0L)))
+            .otherwise(col("executed")))
+        .withColumn("missing",
+          col("failed") && col("compensations") < col("executed"))
+        .groupBy((col("txn") % 8).as("shard"))
+        .agg(count(lit(1)).as("n_sagas"),
+          sum(when(col("failed"), 1L).otherwise(0L)).as("n_failed"),
+          sum(when(col("failed") && !col("missing"), 1L).otherwise(0L))
+            .as("fully_compensated"),
+          sum(when(col("missing"), 1L).otherwise(0L)).as("missing_compensation"),
+          sum(when(col("missing"), col("executed") - col("compensations"))
+            .otherwise(0L)).as("orphaned_steps"))
+        .withColumn("missing_ppm",
+          expr("(missing_compensation * 1000000) DIV n_sagas"))
+        .orderBy("shard")
+    },
       s"""WITH tx AS (
         |  SELECT event_id // 6 AS txn, CAST(COUNT(*) AS BIGINT) AS observed_steps
         |  FROM events GROUP BY 1),
@@ -1689,9 +869,48 @@ object Round13cOps extends Family {
         |    AS orphaned_steps,
         |  (CAST(SUM(CASE WHEN missing THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS missing_ppm
-        |FROM ms GROUP BY 1 ORDER BY shard""".stripMargin,
+        |FROM ms GROUP BY 1 ORDER BY shard""".stripMargin),
 
-    "fn_damerau_edit_eval" ->
+    // Damerau–Levenshtein edit eval — exercises the new NATIVE
+    // graftbridge expression (true Lowrance–Wagner DL, not OSA; Spark
+    // ships only plain levenshtein): 16-char md5 keys corrupted per
+    // class — adjacent TRANSPOSITION (DL charges 1 where levenshtein
+    // charges 2 — the point of the algorithm), single substitution,
+    // single deletion, clean. Graded per class: both distance masses and
+    // the transposition SAVINGS (lev − dl), positive exactly where
+    // transpositions were planted. DuckDB's damerau_levenshtein has the
+    // identical true-DL semantics ("CA"→"ABC" = 2) — the oracle twin.
+    Op("fn_damerau_edit_eval", (s, d) => {
+      Tables.customer(s, d)
+        .select(col("c_custkey"),
+          expr("substring(md5(concat('dl:', CAST(c_custkey AS STRING))), 1, 16)")
+            .as("ref"))
+        .withColumn("cls",
+          when(col("c_custkey") % 4 === 0, lit("transpose"))
+            .when(col("c_custkey") % 4 === 1, lit("substitute"))
+            .when(col("c_custkey") % 4 === 2, lit("delete"))
+            .otherwise(lit("clean")))
+        .withColumn("hyp",
+          when(col("cls") === "transpose", expr(
+            "concat(substring(ref, 1, 4), substring(ref, 6, 1), substring(ref, 5, 1), substring(ref, 7, 10))"))
+            .when(col("cls") === "substitute", expr(
+              """concat(substring(ref, 1, 8),
+                |  CASE WHEN substring(ref, 9, 1) = '9' THEN '0'
+                |       WHEN substring(ref, 9, 1) = 'f' THEN 'a'
+                |       ELSE chr(ascii(substring(ref, 9, 1)) + 1) END,
+                |  substring(ref, 10, 7))""".stripMargin))
+            .when(col("cls") === "delete", expr(
+              "concat(substring(ref, 1, 2), substring(ref, 4, 13))"))
+            .otherwise(col("ref")))
+        .withColumn("dl", expr("graft_damerau(ref, hyp)"))
+        .withColumn("lev", expr("levenshtein(ref, hyp)"))
+        .groupBy("cls")
+        .agg(count(lit(1)).as("n"),
+          sum("dl").as("dl_mass"), sum("lev").as("lev_mass"),
+          max("dl").as("max_dl"))
+        .withColumn("transposition_savings", col("lev_mass") - col("dl_mass"))
+        .orderBy("cls")
+    },
       """WITH r AS (
         |  SELECT c_custkey,
         |    substring(md5('dl:' || CAST(c_custkey AS VARCHAR)), 1, 16) AS ref,
@@ -1718,9 +937,55 @@ object Round13cOps extends Family {
         |  CAST(MAX(damerau_levenshtein(ref, hyp)) AS INT) AS max_dl,
         |  CAST(SUM(levenshtein(ref, hyp)) - SUM(damerau_levenshtein(ref, hyp)) AS BIGINT)
         |    AS transposition_savings
-        |FROM h GROUP BY 1 ORDER BY cls""".stripMargin,
+        |FROM h GROUP BY 1 ORDER BY cls""".stripMargin),
 
-    "join_entity_resolution_dl" ->
+    // Entity resolution under transposition-aware matching — the person-
+    // linkage upgrade join_entity_resolution can't express with plain
+    // levenshtein: every master key carries a constant 'xy' checksum
+    // suffix and the dirty roster corrupts ONLY that suffix ('yx'
+    // transposed / 'xz' shifted / 'zw' double-damaged / clean), so a
+    // cross-candidate in the same 8-char block always sits at key-digit
+    // distance ≥ 1 PLUS suffix distance ≥ 1 — no false links by
+    // construction, bounded candidates, corruptions never touch the
+    // block key. Matched at true-DL ≤ 1: the transposed class links at
+    // DL 1 where levenshtein says 2 — `lev_missed` counts exactly the
+    // records a plain-edit matcher would orphan; the double-damaged
+    // class is provably unmatchable at ≤ 1. Per class: exact/fuzzy/
+    // unmatched + lev_missed.
+    Op("join_entity_resolution_dl", (s, d) => {
+      val master = Tables.customer(s, d)
+        .select(expr("concat('p', lpad(CAST(c_custkey AS STRING), 9, '0'), 'xy')")
+          .as("m_name"))
+        .withColumn("block", expr("substring(m_name, 1, 8)"))
+      val dirty = Tables.customer(s, d)
+        .select(col("c_custkey"),
+          expr("concat('p', lpad(CAST(c_custkey AS STRING), 9, '0'))").as("stem"))
+        .withColumn("cls",
+          when(col("c_custkey") % 5 === 1, lit("transposed"))
+            .when(col("c_custkey") % 5 === 2, lit("shifted"))
+            .when(col("c_custkey") % 5 === 3, lit("double_shift"))
+            .otherwise(lit("clean")))
+        .withColumn("d_name", concat(col("stem"),
+          when(col("cls") === "transposed", lit("yx"))
+            .when(col("cls") === "shifted", lit("xz"))
+            .when(col("cls") === "double_shift", lit("zw"))
+            .otherwise(lit("xy"))))
+        .withColumn("block", expr("substring(d_name, 1, 8)"))
+      val scored = dirty.join(master, Seq("block"), "left")
+        .withColumn("dl", expr("graft_damerau(d_name, m_name)"))
+        .withColumn("lev", expr("levenshtein(d_name, m_name)"))
+        .groupBy("c_custkey", "cls")
+        .agg(min(when(col("dl") <= 1, col("dl"))).as("best_dl"),
+          min(when(col("dl") <= 1, col("lev"))).as("best_lev"))
+      scored.groupBy("cls")
+        .agg(count(lit(1)).as("n_records"),
+          sum(when(col("best_dl") === 0, 1L).otherwise(0L)).as("matched_exact"),
+          sum(when(col("best_dl") === 1, 1L).otherwise(0L)).as("matched_fuzzy"),
+          sum(when(col("best_dl").isNull, 1L).otherwise(0L)).as("unmatched"),
+          sum(when(col("best_dl") <= 1 && col("best_lev") > 1, 1L).otherwise(0L))
+            .as("lev_missed"))
+        .orderBy("cls")
+    },
       """WITH master AS (
         |  SELECT 'p' || lpad(CAST(c_custkey AS VARCHAR), 9, '0') || 'xy' AS m_name,
         |    substring('p' || lpad(CAST(c_custkey AS VARCHAR), 9, '0'), 1, 8) AS block
@@ -1749,9 +1014,27 @@ object Round13cOps extends Family {
         |  CAST(SUM(CASE WHEN best_dl IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS unmatched,
         |  CAST(SUM(CASE WHEN best_dl <= 1 AND best_lev > 1 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS lev_missed
-        |FROM sc GROUP BY 1 ORDER BY cls""".stripMargin,
+        |FROM sc GROUP BY 1 ORDER BY cls""".stripMargin),
 
-    "warehouse_dead_column_audit" ->
+    // Dead-column audit — the warehouse hygiene sweep before a schema
+    // diet: the query log references a 16-column bitmask per query
+    // (md5-drawn, with columns 13–15 masked off — the planted dead
+    // tier); per column: referencing queries, the last week it was
+    // touched, and the DEAD flag that feeds the drop-column proposal.
+    // Bounded 16× explode over the log + one rollup.
+    Op("warehouse_dead_column_audit", (s, d) => {
+      Tables.events(s, d)
+        .select(col("event_id"), expr("ts_us DIV 604800000000").as("week"),
+          expr(s"${md5Bits("q", "event_id", 4)} % 65536")
+            .bitwiseAND(lit(8191L)).as("mask"))
+        .withColumn("column_id", explode(expr("sequence(0, 15)")))
+        .withColumn("referenced", expr("shiftright(mask, column_id) % 2"))
+        .groupBy("column_id")
+        .agg(sum("referenced").as("ref_queries"),
+          max(when(col("referenced") === 1L, col("week"))).as("last_ref_week"))
+        .withColumn("dead", col("ref_queries") === 0L)
+        .orderBy("column_id")
+    },
       s"""WITH q AS (
         |  SELECT event_id, epoch_us(ts) // 604800000000 AS week,
         |    (${duckMd5Bits("q", "event_id", 4)}
@@ -1765,9 +1048,56 @@ object Round13cOps extends Family {
         |  CAST(MAX(CASE WHEN (mask >> CAST(column_id AS INT)) % 2 = 1
         |    THEN week END) AS BIGINT) AS last_ref_week,
         |  SUM((mask >> CAST(column_id AS INT)) % 2) = 0 AS dead
-        |FROM e GROUP BY 1 ORDER BY column_id""".stripMargin,
+        |FROM e GROUP BY 1 ORDER BY column_id""".stripMargin),
 
-    "agg_shapley_attribution" ->
+    // Shapley-value channel attribution — the game-theoretic upgrade of
+    // linear attribution (win_attribution splits credit by position; this
+    // op computes the EXACT Shapley value of the 3-channel cooperative
+    // game): journeys = (user, week) with touched-channel flags, a
+    // conversion is a purchase that week; v(S) = conversions whose
+    // touched set fits inside coalition S. With n = 3 the formula is a
+    // bounded 8-coalition algebra — subset sums by bitmask join, Shapley
+    // weights 2/6, 1/6, 1/6, 2/6 in exact sixths of a micro-credit. The
+    // graded efficiency law Σφ = v(N) − v(∅) ties the whole table out.
+    // One journey rollup is the only data-scaled work.
+    Op("agg_shapley_attribution", (s, d) => {
+      val journeys = Tables.events(s, d)
+        .select(col("user_id"), expr("ts_us DIV 604800000000").as("week"),
+          col("event_type"))
+        .groupBy("user_id", "week")
+        .agg(max(when(col("event_type") === "click", 1).otherwise(0)).as("c0"),
+          max(when(col("event_type") === "view", 1).otherwise(0)).as("c1"),
+          max(when(col("event_type") === "signup", 1).otherwise(0)).as("c2"),
+          max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
+        .where(col("conv") === 1)
+        .select((col("c0") + col("c1") * 2 + col("c2") * 4).as("cell"))
+        .groupBy("cell").agg(count(lit(1)).as("n"))
+        .localCheckpoint() // bounded 8 rows
+      val coalitions = s.range(8).select(col("id").cast("int").as("coalition"))
+      val v = coalitions.join(journeys,
+          (col("cell").bitwiseAND(col("coalition"))) === col("cell"))
+        .groupBy("coalition").agg(sum("n").as("v"))
+      val vFull = coalitions.join(v, Seq("coalition"), "left")
+        .na.fill(0L, Seq("v"))
+      val channels = s.range(3).select(col("id").cast("int").as("channel"))
+      channels
+        .join(vFull.select(col("coalition").as("s"), col("v").as("vs")),
+          (col("s").bitwiseAND(expr("shiftleft(1, channel)"))) === 0)
+        .join(vFull.select(col("coalition").as("si"), col("v").as("vsi")),
+          col("si") === col("s") + expr("shiftleft(1, channel)"))
+        .withColumn("wnum",
+          when(expr("bit_count(s)") === 0, 2L)
+            .when(expr("bit_count(s)") === 1, 1L).otherwise(2L))
+        .groupBy("channel")
+        .agg(sum(col("wnum") * (col("vsi") - col("vs"))).as("six_marginals"))
+        .withColumn("phi_micro", expr("(six_marginals * 1000000) DIV 6"))
+        .crossJoin(broadcast(vFull.where(col("coalition") === 7)
+          .select(col("v").as("v_full"))))
+        .crossJoin(broadcast(vFull.where(col("coalition") === 0)
+          .select(col("v").as("v_empty"))))
+        .select("channel", "phi_micro", "six_marginals", "v_full", "v_empty")
+        .orderBy("channel")
+    },
       """WITH j AS (
         |  SELECT user_id, epoch_us(ts) // 604800000000 AS week,
         |    MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c0,
@@ -1796,9 +1126,48 @@ object Round13cOps extends Family {
         |  (CAST(SUM(m) AS BIGINT) * 1000000) // 6 AS phi_micro,
         |  (SELECT v FROM v WHERE coalition = 7) AS v_full,
         |  (SELECT v FROM v WHERE coalition = 0) AS v_empty
-        |FROM marg GROUP BY 1 ORDER BY channel""".stripMargin,
+        |FROM marg GROUP BY 1 ORDER BY channel""".stripMargin),
 
-    "service_maxmin_fair_share" ->
+    // Max-min fair share (water-filling) — the multi-tenant allocator
+    // every shared cluster runs: demands per principal, capacity = 60%
+    // of total demand, the fill level found by the classic sorted-prefix
+    // test (d_i affordable for everyone from rank i up ⇔ satisfied), the
+    // unsatisfied tail split at the integer level with the remainder
+    // handed one unit each to the largest demands (deterministic total
+    // order). Graded per principal: demand, allocation, clipped — and
+    // the allocations sum EXACTLY to capacity. The demand rollup is the
+    // only data-scaled work; the fill algebra runs on 8 rows.
+    Op("service_maxmin_fair_share", (s, d) => {
+      val demands = Tables.events(s, d)
+        .groupBy((col("user_id") % 8).as("principal"))
+        .agg(count(lit(1)).as("demand"))
+      val wAsc = Window.orderBy(col("demand"), col("principal"))
+      val n = 8
+      val ranked = demands
+        .withColumn("idx", row_number().over(wAsc))
+        .withColumn("prefix", sum("demand").over(
+          wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .crossJoin(broadcast(demands.agg(
+          expr("(SUM(demand) * 3) DIV 5").as("cap"))))
+        .withColumn("affordable",
+          col("demand") * (lit(n) - col("idx") + 1) + col("prefix")
+            - col("demand") <= col("cap"))
+      val k = ranked.agg(
+        sum(when(col("affordable"), 1).otherwise(0)).as("k"),
+        max(when(col("affordable"), col("prefix"))).as("prefix_k")).na.fill(0)
+      ranked.crossJoin(broadcast(k))
+        .withColumn("level", expr(
+          "(cap - coalesce(prefix_k, 0)) DIV (CASE WHEN k < 8 THEN 8 - k ELSE 1 END)"))
+        .withColumn("rem", expr(
+          "(cap - coalesce(prefix_k, 0)) % (CASE WHEN k < 8 THEN 8 - k ELSE 1 END)"))
+        .withColumn("allocation",
+          when(col("affordable"), col("demand"))
+            .otherwise(col("level") +
+              when(col("idx") > lit(n) - col("rem"), 1L).otherwise(0L)))
+        .withColumn("clipped", !col("affordable"))
+        .select("principal", "demand", "allocation", "clipped")
+        .orderBy("principal")
+    },
       """WITH dm AS (
         |  SELECT user_id % 8 AS principal, CAST(COUNT(*) AS BIGINT) AS demand
         |  FROM events GROUP BY 1),
@@ -1827,9 +1196,31 @@ object Round13cOps extends Family {
         |          THEN 1 ELSE 0 END)
         |  END AS BIGINT) AS allocation,
         |  NOT affordable AS clipped
-        |FROM af ORDER BY principal""".stripMargin,
+        |FROM af ORDER BY principal""".stripMargin),
 
-    "llm_span_corruption_plan" ->
+    // T5-style span-corruption plan — the pretraining-objective budget:
+    // 15% of each doc's tokens corrupted in mean-length-3 spans, one
+    // sentinel token per span; graded per source: token mass, corrupted
+    // mass, sentinel mass, denoised output length and the realized
+    // corruption ratio ppm (≈ 150000 with the exact ceil-div bias the
+    // plan must account for). One projection + one rollup.
+    Op("llm_span_corruption_plan", (s, d) => {
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source"), expr("n_chars DIV 4").as("tokens"))
+        .withColumn("target", expr("(tokens * 150000) DIV 1000000"))
+        .withColumn("spans", expr("(target + 2) DIV 3"))
+        .withColumn("corrupted", least(col("spans") * 3, col("tokens")))
+        .withColumn("out_len",
+          col("tokens") - col("corrupted") + col("spans"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), sum("tokens").as("token_mass"),
+          sum("corrupted").as("corrupted_mass"),
+          sum("spans").as("sentinel_mass"),
+          sum("out_len").as("output_mass"))
+        .withColumn("realized_ratio_ppm",
+          expr("(corrupted_mass * 1000000) DIV token_mass"))
+        .orderBy("source")
+    },
       """WITH t AS (
         |  SELECT doc_id, source, n_chars // 4 AS tokens FROM documents),
         |p AS (
@@ -1847,9 +1238,36 @@ object Round13cOps extends Family {
         |  CAST(SUM(tokens - corrupted + spans) AS BIGINT) AS output_mass,
         |  (CAST(SUM(corrupted) AS BIGINT) * 1000000) // CAST(SUM(tokens) AS BIGINT)
         |    AS realized_ratio_ppm
-        |FROM sp GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM sp GROUP BY 1 ORDER BY source""".stripMargin),
 
-    "service_clock_skew_audit" ->
+    // Distributed clock-skew audit — the NTP-style minimum filter over
+    // observed offsets: each node (user % 8) stamps events with a
+    // planted constant skew (node·1500 − 4000 µs) plus md5 jitter in
+    // [0, 1000); the receive-side offset series per node is filtered by
+    // MIN (jitter is strictly additive, so the minimum recovers the true
+    // skew to within the smallest jitter draw — the classic argument).
+    // Per node: events, estimated skew, jitter spread, and the
+    // second-boundary drift mass (events whose send and receive stamps
+    // land in different wall-clock seconds — the bucketing disagreement
+    // any per-second rollup downstream inherits).
+    Op("service_clock_skew_audit", (s, d) => {
+      Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us"))
+        .withColumn("node", col("user_id") % 8)
+        .withColumn("offset", col("node") * 1500L - 4000L +
+          expr(s"${md5Bits("j", "event_id", 4)} % 1000"))
+        .withColumn("recv_us", col("ts_us") + col("offset"))
+        .withColumn("crossed",
+          when(expr("recv_us DIV 1000000") =!= expr("ts_us DIV 1000000"), 1L)
+            .otherwise(0L))
+        .groupBy("node")
+        .agg(count(lit(1)).as("n_events"),
+          min("offset").as("est_skew_us"),
+          (max("offset") - min("offset")).as("jitter_spread_us"),
+          sum("crossed").as("bucket_drift"))
+        .withColumn("drift_ppm", expr("(bucket_drift * 1000000) DIV n_events"))
+        .orderBy("node")
+    },
       s"""WITH o AS (
         |  SELECT user_id % 8 AS node, event_id, epoch_us(ts) AS ts_us,
         |    (user_id % 8) * 1500 - 4000 +
@@ -1867,9 +1285,26 @@ object Round13cOps extends Family {
         |  CAST(SUM(crossed) AS BIGINT) AS bucket_drift,
         |  (CAST(SUM(crossed) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT)
         |    AS drift_ppm
-        |FROM c GROUP BY 1 ORDER BY node""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY node""".stripMargin),
 
-    "warehouse_watermark_alignment" ->
+    // Ingest watermark alignment — the multi-source barrier every
+    // incremental pipeline computes before advancing: per source stream
+    // (event type) the high-water mark, the GLOBAL SAFE BARRIER is the
+    // minimum of them, and each source's lead over the barrier names the
+    // straggler holding everyone back. Exact µs integers; one rollup +
+    // one broadcast scalar.
+    Op("warehouse_watermark_alignment", (s, d) => {
+      val marks = Tables.events(s, d)
+        .groupBy("event_type")
+        .agg(max("ts_us").as("hwm_us"), count(lit(1)).as("n_rows"))
+      val barrier = marks.agg(min("hwm_us").as("barrier_us"))
+      marks.crossJoin(broadcast(barrier))
+        .withColumn("lead_us", col("hwm_us") - col("barrier_us"))
+        .withColumn("is_straggler", col("lead_us") === 0L)
+        .select("event_type", "n_rows", "hwm_us", "barrier_us", "lead_us",
+          "is_straggler")
+        .orderBy("event_type")
+    },
       """WITH m AS (
         |  SELECT event_type, MAX(epoch_us(ts)) AS hwm_us,
         |    CAST(COUNT(*) AS BIGINT) AS n_rows
@@ -1879,9 +1314,40 @@ object Round13cOps extends Family {
         |  (SELECT barrier_us FROM b) AS barrier_us,
         |  hwm_us - (SELECT barrier_us FROM b) AS lead_us,
         |  hwm_us - (SELECT barrier_us FROM b) = 0 AS is_straggler
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin),
 
-    "llm_model_router_sweep" ->
+    // Model-router threshold sweep — the serving cost/quality frontier:
+    // requests carry an md5 router confidence (milli) and a planted
+    // quality structure (the large model wins the low-confidence tail);
+    // FOUR candidate thresholds are swept in one pass (a bounded 4×
+    // explode — the whole frontier from one scan, the way a router is
+    // actually tuned offline): below the threshold the request escalates
+    // to the large model at 10× cost. Per threshold: requests escalated,
+    // cost units, quality wins kept vs always-large, and the
+    // cost-per-win frontier point in exact milli.
+    Op("llm_model_router_sweep", (s, d) => {
+      Tables.events(s, d)
+        .select(col("event_id"))
+        .withColumn("conf_milli", expr(
+          s"${md5Bits("rc", "event_id", 6)} % 1000"))
+        .withColumn("large_wins", expr(
+          s"${md5Bits("rq", "event_id", 6)} % 1000") <
+          (lit(900L) - col("conf_milli")))
+        .withColumn("threshold", explode(expr("array(200, 400, 600, 800)")))
+        .withColumn("escalated", col("conf_milli") < col("threshold"))
+        .groupBy("threshold")
+        .agg(count(lit(1)).as("n_requests"),
+          sum(when(col("escalated"), 1L).otherwise(0L)).as("n_escalated"),
+          sum(when(col("escalated"), 10L).otherwise(1L)).as("cost_units"),
+          sum(when(col("escalated") && col("large_wins"), 1L).otherwise(0L))
+            .as("wins_kept"),
+          sum(when(col("large_wins"), 1L).otherwise(0L)).as("wins_possible"))
+        .withColumn("recall_milli",
+          expr("(wins_kept * 1000) DIV NULLIF(wins_possible, 0)"))
+        .withColumn("cost_per_win_milli",
+          expr("(cost_units * 1000) DIV (wins_kept + 1)"))
+        .orderBy("threshold")
+    },
       s"""WITH r AS (
         |  SELECT event_id,
         |    ${duckMd5Bits("rc", "event_id", 6)}
@@ -1909,9 +1375,49 @@ object Round13cOps extends Family {
         |  (CAST(SUM(CASE WHEN escalated THEN 10 ELSE 1 END) AS BIGINT) * 1000)
         |    // (CAST(SUM(CASE WHEN escalated AND large_wins THEN 1 ELSE 0 END) AS BIGINT) + 1)
         |    AS cost_per_win_milli
-        |FROM e GROUP BY 1 ORDER BY threshold""".stripMargin,
+        |FROM e GROUP BY 1 ORDER BY threshold""".stripMargin),
 
-    "llm_html_strip" ->
+    // HTML stripping + entity decoding — the first pass of every web
+    // corpus: planted markup per class (block tags, attributed tags with
+    // escaped entities, entity-only, plain), tags removed by one regex
+    // sweep, entities decoded in the STANDARD order (&amp; strictly
+    // last, so '&amp;lt;' decodes to the literal '&lt;' and not '<' —
+    // the double-decode bug this op guards against). Graded per class:
+    // docs, chars in/out, tags removed, entities decoded — all counted
+    // by the engines' regex machinery, no UDF.
+    Op("llm_html_strip", (s, d) => {
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source"), col("text"))
+        .withColumn("cls",
+          when(col("doc_id") % 4 === 0, lit("block"))
+            .when(col("doc_id") % 4 === 1, lit("attributed"))
+            .when(col("doc_id") % 4 === 2, lit("entities")).otherwise(lit("plain")))
+        .withColumn("html",
+          when(col("cls") === "block", concat(lit("<p>"), col("text"), lit("</p>")))
+            .when(col("cls") === "attributed", concat(
+              lit("<div class=\"a\">"), col("text"), lit(" &amp; &lt;tag&gt;</div>")))
+            .when(col("cls") === "entities", concat(
+              col("text"), lit(" &quot;q&quot; &#39;s&#39;")))
+            .otherwise(col("text")))
+        .withColumn("tags", regexp_count(col("html"), lit("<[^>]*>")))
+        .withColumn("entities", regexp_count(col("html"),
+          lit("&(amp|lt|gt|quot|#39);")))
+        .withColumn("stripped", regexp_replace(col("html"), "<[^>]*>", ""))
+        .withColumn("decoded",
+          regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+            regexp_replace(col("stripped"),
+              "&lt;", "<"), "&gt;", ">"), "&quot;", "\""), "&#39;", "'"),
+            "&amp;", "&"))
+        .groupBy("cls")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(length(col("html"))).as("chars_in"),
+          sum(length(col("decoded"))).as("chars_out"),
+          sum("tags").as("tags_removed"),
+          sum("entities").as("entities_decoded"))
+        .withColumn("shrink_ppm",
+          expr("((chars_in - chars_out) * 1000000) DIV chars_in"))
+        .orderBy("cls")
+    },
       """WITH c AS (
         |  SELECT doc_id, text,
         |    CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'block'
@@ -1950,9 +1456,38 @@ object Round13cOps extends Family {
         |  CAST(SUM(entities) AS BIGINT) AS entities_decoded,
         |  ((CAST(SUM(length(html)) AS BIGINT) - CAST(SUM(length(decoded)) AS BIGINT))
         |    * 1000000) // CAST(SUM(length(html)) AS BIGINT) AS shrink_ppm
-        |FROM st GROUP BY 1 ORDER BY cls""".stripMargin,
+        |FROM st GROUP BY 1 ORDER BY cls""".stripMargin),
 
-    "llm_dataset_datasheet" ->
+    // Dataset datasheet — the one-row-per-source summary a corpus ships
+    // with (the "datasheets for datasets" practice): doc census, token
+    // mass and mean, language diversity (distinct + dominant via max_by
+    // over the language sub-rollup), the flagged-content rate (planted
+    // 1-in-50 md5 tier) and the short-doc tail. Two rollups + one
+    // broadcast join — the composite read every downstream consumer
+    // starts from.
+    Op("llm_dataset_datasheet", (s, d) => {
+      val base = Tables.documents(s, d)
+        .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
+        .withColumn("flagged", expr(
+          s"${md5Bits("tox", "doc_id", 6)} % 50") === 7L)
+      val counts = base.groupBy("source", "lang").agg(count(lit(1)).as("n"))
+      val wDom = Window.partitionBy("source")
+        .orderBy(col("n").desc, col("lang").desc)
+      val perLang = counts
+        .withColumn("rn", row_number().over(wDom)).where(col("rn") === 1)
+        .select(col("source"), col("lang").as("dominant_lang"))
+        .join(counts.groupBy("source").agg(countDistinct("lang").as("n_langs")),
+          Seq("source"))
+      base.groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(expr("n_chars DIV 4")).as("token_mass"),
+          sum(when(col("flagged"), 1L).otherwise(0L)).as("flagged_docs"),
+          sum(when(col("n_chars") < 100, 1L).otherwise(0L)).as("short_docs"))
+        .withColumn("mean_tokens", expr("token_mass DIV n_docs"))
+        .withColumn("flagged_ppm", expr("(flagged_docs * 1000000) DIV n_docs"))
+        .join(broadcast(perLang), Seq("source"))
+        .orderBy("source")
+    },
       s"""WITH base AS (
         |  SELECT doc_id, source, lang, n_chars,
         |    ${duckMd5Bits("tox", "doc_id", 6)}
@@ -1981,9 +1516,29 @@ object Round13cOps extends Family {
         |  dominant_lang, n_langs
         |FROM agg JOIN dom ON agg.source = dom.source
         |JOIN nl ON agg.source = nl.source
-        |ORDER BY agg.source""".stripMargin,
+        |ORDER BY agg.source""".stripMargin),
 
-    "llm_lang_rebalance_plan" ->
+    // Language rebalancing plan — the multilingual sampling policy
+    // upstream of training (English dominates every web crawl; the plan
+    // upsamples tail languages under a 3× cap so no language is ever
+    // repeated more than thrice): per language the natural share, the
+    // uniform target, the capped sampling factor in exact milli and the
+    // corpus size after resampling. One rollup + broadcast totals.
+    Op("llm_lang_rebalance_plan", (s, d) => {
+      val byLang = Tables.documents(s, d)
+        .groupBy("lang").agg(count(lit(1)).as("docs"))
+      val tot = byLang.agg(sum("docs").as("total"),
+        count(lit(1)).as("n_langs"))
+      byLang.crossJoin(broadcast(tot))
+        .withColumn("natural_ppm", expr("(docs * 1000000) DIV total"))
+        .withColumn("target_docs", expr("total DIV n_langs"))
+        .withColumn("factor_milli",
+          least(expr("(target_docs * 1000) DIV docs"), lit(3000L)))
+        .withColumn("docs_after", expr("(docs * factor_milli) DIV 1000"))
+        .select("lang", "docs", "natural_ppm", "target_docs", "factor_milli",
+          "docs_after")
+        .orderBy("lang")
+    },
       """WITH bl AS (
         |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS docs
         |  FROM documents GROUP BY 1),
@@ -1996,9 +1551,41 @@ object Round13cOps extends Family {
         |    1000 * 3) AS factor_milli,
         |  (docs * LEAST((((SELECT total FROM t) // (SELECT n_langs FROM t)) * 1000)
         |    // docs, 3000)) // 1000 AS docs_after
-        |FROM bl ORDER BY lang""".stripMargin,
+        |FROM bl ORDER BY lang""".stripMargin),
 
-    "service_composite_slo" ->
+    // Composite-SLO chain availability — the SRE dependency math: four
+    // serving chains of three components each, per-component error ppm
+    // from the request log, chain availability = the EXACT product
+    // Π(1e6 − err_c) carried in DECIMAL(38,0)/HUGEINT (a 10¹⁸-scale
+    // triple product that double arithmetic would round), plus the
+    // weakest link per chain (tie-safe window). One rollup + bounded
+    // algebra — the "your SLO is the product of your dependencies'"
+    // lesson, made exact.
+    Op("service_composite_slo", (s, d) => {
+      val comp = Tables.events(s, d)
+        .select((col("event_id") % 12).as("component"), col("event_type"))
+        .groupBy("component")
+        .agg(count(lit(1)).as("requests"),
+          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("errors"))
+        .withColumn("err_ppm", expr("(errors * 1000000) DIV requests"))
+        .withColumn("chain", expr("component DIV 3"))
+      val wWeak = Window.partitionBy("chain")
+        .orderBy(col("err_ppm").desc, col("component").desc)
+      val weak = comp.withColumn("rn", row_number().over(wWeak))
+        .where(col("rn") === 1)
+        .select(col("chain"), col("component").as("weakest_component"),
+          col("err_ppm").as("weakest_err_ppm"))
+      comp.groupBy("chain")
+        .agg(sum("requests").as("requests"),
+          expr("""CAST(
+                 |  CAST(MIN(CASE WHEN component % 3 = 0 THEN 1000000 - err_ppm END) AS DECIMAL(38,0))
+                 |  * MIN(CASE WHEN component % 3 = 1 THEN 1000000 - err_ppm END)
+                 |  * MIN(CASE WHEN component % 3 = 2 THEN 1000000 - err_ppm END)
+                 |  DIV 1000000000000 AS BIGINT)""".stripMargin)
+            .as("composite_avail_ppm"))
+        .join(broadcast(weak), Seq("chain"))
+        .orderBy("chain")
+    },
       """WITH c AS (
         |  SELECT event_id % 12 AS component,
         |    CAST(COUNT(*) AS BIGINT) AS requests,
@@ -2025,9 +1612,40 @@ object Round13cOps extends Family {
         |SELECT ch.chain, requests, composite_avail_ppm,
         |  weakest_component, weakest_err_ppm
         |FROM ch JOIN weak ON ch.chain = weak.chain
-        |ORDER BY ch.chain""".stripMargin,
+        |ORDER BY ch.chain""".stripMargin),
 
-    "agg_diff_in_diff" ->
+    // Difference-in-differences — the causal workhorse beside
+    // agg_stratified_ate (which adjusts a cross-section; DiD removes
+    // time-invariant confounding with a pre/post × treat/control grid):
+    // treatment by user parity, the post period opens at the corpus
+    // midpoint (broadcast bounds, so the split replays exactly), a
+    // planted +700 effect lands ONLY on treated-post (the outcome is the
+    // bounded cents-mod-1000 band so the effect dominates sampling noise
+    // at every scale). All four cell means in exact micro-units, DiD =
+    // the double difference. One
+    // conditional rollup per event type — no joins, no windows.
+    Op("agg_diff_in_diff", (s, d) => {
+      val bounds = Tables.events(s, d)
+        .agg(min("ts_us").as("lo"), max("ts_us").as("hi"))
+      Tables.events(s, d)
+        .select(col("event_type"), col("user_id"), col("ts_us"),
+          expr("CAST(FLOOR(value * 100) AS BIGINT)").as("cents"))
+        .crossJoin(broadcast(bounds))
+        .withColumn("treated", col("user_id") % 2 === 1)
+        .withColumn("post", (col("ts_us") - col("lo")) * 2 >= col("hi") - col("lo"))
+        .withColumn("y", col("cents") % 1000 +
+          when(col("treated") && col("post"), 700L).otherwise(0L))
+        .groupBy("event_type")
+        .agg(
+          expr("(SUM(CASE WHEN treated AND post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN treated AND post THEN 1 ELSE 0 END), 0)").as("m_t_post"),
+          expr("(SUM(CASE WHEN treated AND NOT post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN treated AND NOT post THEN 1 ELSE 0 END), 0)").as("m_t_pre"),
+          expr("(SUM(CASE WHEN NOT treated AND post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN NOT treated AND post THEN 1 ELSE 0 END), 0)").as("m_c_post"),
+          expr("(SUM(CASE WHEN NOT treated AND NOT post THEN y ELSE 0 END) * 1000000) DIV NULLIF(SUM(CASE WHEN NOT treated AND NOT post THEN 1 ELSE 0 END), 0)").as("m_c_pre"),
+          count(lit(1)).as("n_obs"))
+        .withColumn("did_micro",
+          (col("m_t_post") - col("m_t_pre")) - (col("m_c_post") - col("m_c_pre")))
+        .orderBy("event_type")
+    },
       """WITH b AS (
         |  SELECT MIN(epoch_us(ts)) AS lo, MAX(epoch_us(ts)) AS hi FROM events),
         |g AS (
@@ -2054,9 +1672,42 @@ object Round13cOps extends Family {
         |  FROM y GROUP BY 1)
         |SELECT event_type, m_t_post, m_t_pre, m_c_post, m_c_pre, n_obs,
         |  (m_t_post - m_t_pre) - (m_c_post - m_c_pre) AS did_micro
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin),
 
-    "warehouse_query_fingerprint" ->
+    // Query-fingerprint cache analysis — the DBA's statement-cache
+    // telemetry: the query log rendered from its own fields, literals
+    // normalized away by one digit-sweep regex, and the surviving
+    // TEMPLATE census per table answers "how big need the plan cache
+    // be": distinct templates, cache hit ppm (repeat executions), the
+    // hottest template's share. Per-table rollup + tie-safe hottest
+    // window.
+    Op("warehouse_query_fingerprint", (s, d) => {
+      val q = Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("value"))
+        .withColumn("tbl", concat(lit("t"), (col("event_id") % 7).cast("string")))
+        .withColumn("qtext",
+          when(col("event_id") % 3 === 0, expr(
+            "concat('SELECT v FROM ', tbl, ' WHERE user_id = ', CAST(user_id AS STRING))"))
+            .when(col("event_id") % 3 === 1, expr(
+              "concat('SELECT v FROM ', tbl, ' WHERE v > ', CAST(CAST(FLOOR(value) AS BIGINT) AS STRING))"))
+            .otherwise(expr(
+              "concat('SELECT v FROM ', tbl, ' WHERE v BETWEEN 0 AND ', CAST(CAST(FLOOR(value) AS BIGINT) AS STRING))")))
+        .withColumn("template", regexp_replace(col("qtext"), "[0-9]+", "?"))
+      val perTemplate = q.groupBy("tbl", "template")
+        .agg(count(lit(1)).as("execs"))
+      val wHot = Window.partitionBy("tbl")
+        .orderBy(col("execs").desc, col("template").desc)
+      val hottest = perTemplate.withColumn("rn", row_number().over(wHot))
+        .where(col("rn") === 1)
+        .select(col("tbl"), col("execs").as("hottest_execs"))
+      perTemplate.groupBy("tbl")
+        .agg(sum("execs").as("n_queries"),
+          count(lit(1)).as("n_templates"))
+        .withColumn("cache_hit_ppm",
+          expr("((n_queries - n_templates) * 1000000) DIV n_queries"))
+        .join(broadcast(hottest), Seq("tbl"))
+        .orderBy("tbl")
+    },
       """WITH q AS (
         |  SELECT 't' || CAST(event_id % 7 AS VARCHAR) AS tbl,
         |    regexp_replace(
@@ -2085,9 +1736,28 @@ object Round13cOps extends Family {
         |  ((n_queries - n_templates) * 1000000) // n_queries AS cache_hit_ppm,
         |  hottest_execs
         |FROM agg JOIN hot ON agg.tbl = hot.tbl
-        |ORDER BY agg.tbl""".stripMargin,
+        |ORDER BY agg.tbl""".stripMargin),
 
-    "warehouse_recon_rowcounts" ->
+    // Cross-system row-count reconciliation — the nightly data-eng
+    // ritual: the replica silently dropped every event_id ≡ 13 mod 101
+    // (a planted CDC bug), and the per-day recon report must localize
+    // it: source vs replica counts, the per-day and cumulative missing
+    // mass, and the FIRST divergent day (where the incident review
+    // starts). One conditional rollup + one ~30-row day window.
+    Op("warehouse_recon_rowcounts", (s, d) => {
+      val wDay = Window.orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      Tables.events(s, d)
+        .select(col("event_id"), expr("ts_us DIV 86400000000").as("day"))
+        .groupBy("day")
+        .agg(count(lit(1)).as("src_n"),
+          sum(when(col("event_id") % 101 === 13, 0L).otherwise(1L)).as("rep_n"))
+        .withColumn("missing", col("src_n") - col("rep_n"))
+        .withColumn("cum_missing", sum("missing").over(wDay))
+        .withColumn("is_first_divergent",
+          col("missing") > 0L && col("cum_missing") === col("missing"))
+        .orderBy("day")
+    },
       """WITH r AS (
         |  SELECT epoch_us(ts) // 86400000000 AS day,
         |    CAST(COUNT(*) AS BIGINT) AS src_n,
@@ -2100,9 +1770,48 @@ object Round13cOps extends Family {
         |  FROM r)
         |SELECT day, src_n, rep_n, missing, cum_missing,
         |  missing > 0 AND cum_missing = missing AS is_first_divergent
-        |FROM w ORDER BY day""".stripMargin,
+        |FROM w ORDER BY day""".stripMargin),
 
-    "service_failover_ring_plan" ->
+    // Failover ring plan — the multi-region capacity rehearsal: eight
+    // regions in a ring, two planted outages (regions 2 and 5), each
+    // unhealthy region fails over to the NEXT HEALTHY region clockwise
+    // (bounded ring self-join, min hop wins); graded per region: own
+    // load, failover target, the post-failover load including adopted
+    // traffic, and the headroom pressure vs the uniform mean in exact
+    // ppm — the question a failover drill must answer BEFORE the outage.
+    Op("service_failover_ring_plan", (s, d) => {
+      val loads = Tables.events(s, d)
+        .groupBy((col("user_id") % 8).as("region"))
+        .agg(count(lit(1)).as("load"))
+        .withColumn("healthy", !col("region").isin(2L, 5L))
+        .localCheckpoint() // bounded 8 rows, reused by the ring join
+      val hops = s.range(1, 8).select(col("id").as("hop"))
+      val targets = loads.where(!col("healthy"))
+        .select(col("region").as("src"), col("load").as("moved_load"))
+        .crossJoin(hops)
+        .withColumn("cand", (col("src") + col("hop")) % 8)
+        .join(loads.where(col("healthy")).select(col("region").as("cand")),
+          Seq("cand"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("src").orderBy("hop")))
+        .where(col("rn") === 1)
+        .select(col("src"), col("cand").as("target"), col("moved_load"))
+      val adopted = targets.groupBy(col("target").as("region"))
+        .agg(sum("moved_load").as("adopted_load"))
+      val mean = loads.agg(expr("SUM(load) DIV 8").as("mean_load"))
+      loads.join(broadcast(targets.select(col("src").as("region"), col("target"))),
+          Seq("region"), "left")
+        .join(broadcast(adopted), Seq("region"), "left")
+        .na.fill(0L, Seq("adopted_load"))
+        .withColumn("post_failover_load",
+          when(col("healthy"), col("load") + col("adopted_load")).otherwise(0L))
+        .crossJoin(broadcast(mean))
+        .withColumn("pressure_ppm",
+          expr("(post_failover_load * 1000000) DIV mean_load"))
+        .select("region", "healthy", "load", "target", "post_failover_load",
+          "pressure_ppm")
+        .orderBy("region")
+    },
       """WITH loads AS (
         |  SELECT user_id % 8 AS region, CAST(COUNT(*) AS BIGINT) AS load,
         |    user_id % 8 NOT IN (2, 5) AS healthy
@@ -2130,9 +1839,52 @@ object Round13cOps extends Family {
         |FROM loads l
         |LEFT JOIN t ON l.region = t.src
         |LEFT JOIN ad ON l.region = ad.region
-        |ORDER BY l.region""".stripMargin,
+        |ORDER BY l.region""".stripMargin),
 
-    "join_allen_relations" ->
+    // Allen's interval algebra census — the formal 13-relation
+    // classification (precedes/meets/overlaps/starts/during/finishes,
+    // their inverses, equals) over session intervals (value·3e7 µs, up
+    // to ~2.7 h, so the overlap classes actually occur at sparse and
+    // dense traffic alike), pairs BLOCKED on
+    // the (user, hour) cell exactly like mm_subtitle_align (bounded
+    // candidates, linear at any scale); the CASE ladder is exhaustive
+    // and mutually exclusive on exact µs endpoints, so the census
+    // partitions the pair set — the relationship histogram every
+    // temporal-reasoning engine is validated against.
+    Op("join_allen_relations", (s, d) => {
+      val iv = Tables.events(s, d)
+        .select(col("user_id"), col("event_id"), col("ts_us").as("s"),
+          (col("ts_us") + expr("CAST(FLOOR(value * 30000000) AS BIGINT)")).as("e"))
+        .withColumn("hour", expr("s DIV 3600000000"))
+      val a = iv.select(col("user_id"), col("hour"), col("event_id").as("a_id"),
+        col("s").as("a_s"), col("e").as("a_e"))
+      val b = iv.select(col("user_id"), col("hour"), col("event_id").as("b_id"),
+        col("s").as("b_s"), col("e").as("b_e"))
+      val pairs = a.join(b, Seq("user_id", "hour"))
+        .where(col("a_id") < col("b_id"))
+        .withColumn("relation", expr(
+          """CASE
+            |  WHEN a_e < b_s THEN 'precedes'
+            |  WHEN b_e < a_s THEN 'preceded_by'
+            |  WHEN a_e = b_s THEN 'meets'
+            |  WHEN b_e = a_s THEN 'met_by'
+            |  WHEN a_s < b_s AND a_e < b_e THEN 'overlaps'
+            |  WHEN a_s < b_s AND a_e = b_e THEN 'finished_by'
+            |  WHEN a_s < b_s THEN 'contains'
+            |  WHEN a_s = b_s AND a_e < b_e THEN 'starts'
+            |  WHEN a_s = b_s AND a_e = b_e THEN 'equals'
+            |  WHEN a_s = b_s THEN 'started_by'
+            |  WHEN a_e < b_e THEN 'during'
+            |  WHEN a_e = b_e THEN 'finishes'
+            |  ELSE 'overlapped_by'
+            |END""".stripMargin))
+      val tot = pairs.agg(count(lit(1)).as("total"))
+      pairs.groupBy("relation").agg(count(lit(1)).as("n_pairs"))
+        .crossJoin(broadcast(tot))
+        .withColumn("share_ppm", expr("(n_pairs * 1000000) DIV total"))
+        .select("relation", "n_pairs", "share_ppm")
+        .orderBy("relation")
+    },
       """WITH iv AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS s,
         |    epoch_us(ts) + CAST(FLOOR(value * 30000000) AS BIGINT) AS e,
@@ -2164,9 +1916,35 @@ object Round13cOps extends Family {
         |SELECT relation, CAST(COUNT(*) AS BIGINT) AS n_pairs,
         |  (CAST(COUNT(*) AS BIGINT) * 1000000) // (SELECT total FROM tt)
         |    AS share_ppm
-        |FROM c GROUP BY 1 ORDER BY relation""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY relation""".stripMargin),
 
-    "agg_wilson_lower_bound" -> {
+    // Wilson lower-bound ranking — the comment-sort classic (rank by the
+    // LOWER confidence bound, never the raw rate, so a 2/2 item cannot
+    // outrank a 95/100 one): per item the z=2 Wilson bound computed
+    // ENTIRELY in integers — LB = (ns + 2 − 2·√(ns·nf/n + 1))/(n + 4)
+    // in ppm, the root taken by the native IntSqrt expression (exact
+    // integer floor; the DuckDB twin is the corrected FLOOR(SQRT)) — and
+    // the global rank over the bounded item table. The item rollup is
+    // the only data-scaled work. phat is carried beside the bound so the
+    // small-sample demotion is visible in the graded output.
+    Op("agg_wilson_lower_bound", (s, d) => {
+      val items = Tables.orders(s, d)
+        .groupBy((col("o_orderkey") % 100).as("item"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L)).as("ns"))
+        .withColumn("nf", col("n") - col("ns"))
+        .withColumn("phat_ppm", expr("(ns * 1000000) DIV n"))
+        .withColumn("root", expr(
+          "isqrt(((ns * nf) DIV n + 1) * 1000000000000)"))
+        .withColumn("wilson_lb_ppm", expr(
+          "(ns * 1000000 + 2000000 - 2 * root) DIV (n + 4)"))
+      items
+        .withColumn("rank_wilson", row_number().over(
+          Window.orderBy(col("wilson_lb_ppm").desc, col("item"))))
+        .select("item", "n", "ns", "phat_ppm", "wilson_lb_ppm", "rank_wilson")
+        .orderBy("item")
+    },
+      {
       val root = Round12cOps.duckIsqrt("((ns * nf) // n + 1) * 1000000000000")
       s"""WITH i AS (
          |  SELECT o_orderkey % 100 AS item, CAST(COUNT(*) AS BIGINT) AS n,
@@ -2184,9 +1962,36 @@ object Round13cOps extends Family {
          |  CAST(ROW_NUMBER() OVER (ORDER BY wilson_lb_ppm DESC, item) AS INT)
          |    AS rank_wilson
          |FROM lb ORDER BY item""".stripMargin
-    },
+    }),
 
-    "llm_active_label_selection" ->
+    // Active-learning batch selection — the labeling-ops loop: model
+    // scores in milli, uncertainty = distance from the 500 decision
+    // boundary, the next annotation batch is the 25 MOST UNCERTAIN per
+    // pool (rank window, deterministic ties); graded per pool: the
+    // selected batch's mean uncertainty vs the pool's — the gap that
+    // justifies active over random labeling. One rank window + one
+    // rollup.
+    Op("llm_active_label_selection", (s, d) => {
+      val wU = Window.partitionBy("source")
+        .orderBy(col("uncertainty"), col("doc_id"))
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("source"))
+        .withColumn("score_milli", expr(
+          s"${md5Bits("al", "doc_id", 6)} % 1000"))
+        .withColumn("uncertainty", abs(col("score_milli") - 500L))
+        .withColumn("selected", row_number().over(wU) <= 25)
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_candidates"),
+          sum(when(col("selected"), 1L).otherwise(0L)).as("n_selected"),
+          sum(when(col("selected"), col("uncertainty")).otherwise(0L))
+            .as("sel_uncertainty_mass"),
+          sum("uncertainty").as("pool_uncertainty_mass"))
+        .withColumn("mean_sel_unc_milli",
+          expr("sel_uncertainty_mass DIV n_selected"))
+        .withColumn("mean_pool_unc_milli",
+          expr("pool_uncertainty_mass DIV n_candidates"))
+        .orderBy("source")
+    },
       s"""WITH sc AS (
         |  SELECT doc_id, source,
         |    abs(${duckMd5Bits("al", "doc_id", 6)}
@@ -2207,9 +2012,35 @@ object Round13cOps extends Family {
         |    AS mean_sel_unc_milli,
         |  CAST(SUM(uncertainty) AS BIGINT) // CAST(COUNT(*) AS BIGINT)
         |    AS mean_pool_unc_milli
-        |FROM r GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY source""".stripMargin),
 
-    "win_activity_streaks" ->
+    // Daily-activity streaks — the engagement metric every consumer
+    // product reports: per user the DISTINCT active days collapse into
+    // consecutive-day islands (day − row_number, the gaps-and-islands
+    // identity on the calendar axis), longest streak per user, then per
+    // principal cohort: users, the record streak, streak mass, and the
+    // ≥ 7-day power-user census. Distinct-day rollup + user window +
+    // cohort rollup.
+    Op("win_activity_streaks", (s, d) => {
+      val wDay = Window.partitionBy("user_id").orderBy("day")
+      val streaks = Tables.events(s, d)
+        .select(col("user_id"), expr("ts_us DIV 86400000000").as("day"))
+        .distinct()
+        .withColumn("island", col("day") - row_number().over(wDay))
+        .groupBy("user_id", "island")
+        .agg(count(lit(1)).as("len"))
+        .groupBy("user_id")
+        .agg(max("len").as("longest"), count(lit(1)).as("n_streaks"),
+          sum("len").as("active_days"))
+      streaks.groupBy((col("user_id") % 8).as("principal"))
+        .agg(count(lit(1)).as("n_users"),
+          max("longest").as("record_streak"),
+          sum("longest").as("longest_mass"),
+          sum("active_days").as("active_day_mass"),
+          sum(when(col("longest") >= 7L, 1L).otherwise(0L)).as("power_users"))
+        .withColumn("power_ppm", expr("(power_users * 1000000) DIV n_users"))
+        .orderBy("principal")
+    },
       """WITH days AS (
         |  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
         |  FROM events),
@@ -2232,9 +2063,38 @@ object Round13cOps extends Family {
         |  CAST(SUM(CASE WHEN longest >= 7 THEN 1 ELSE 0 END) AS BIGINT) AS power_users,
         |  (CAST(SUM(CASE WHEN longest >= 7 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
         |    // CAST(COUNT(*) AS BIGINT) AS power_ppm
-        |FROM pu GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM pu GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "fn_iso8601_duration" ->
+    // ISO-8601 duration round-trip — the API serialization gate (PnDTnHnMnS
+    // is how a person-service wire carries intervals): durations rendered
+    // from exact integer seconds, re-parsed by anchored regexp_extract,
+    // and the graded round-trip (zero mismatches, seconds mass conserved)
+    // is a proof over the whole log. Pure integer/string surgery, both
+    // engines codegen'd.
+    Op("fn_iso8601_duration", (s, d) => {
+      Tables.events(s, d)
+        .select(col("event_type"),
+          expr("CAST(FLOOR(value * 1000) AS BIGINT)").as("secs"))
+        .withColumn("iso", expr(
+          """concat('P', CAST(secs DIV 86400 AS STRING), 'DT',
+            |  CAST(secs % 86400 DIV 3600 AS STRING), 'H',
+            |  CAST(secs % 3600 DIV 60 AS STRING), 'M',
+            |  CAST(secs % 60 AS STRING), 'S')""".stripMargin))
+        .withColumn("parsed", expr(
+          """CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 1) AS BIGINT) * 86400
+            |+ CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 2) AS BIGINT) * 3600
+            |+ CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 3) AS BIGINT) * 60
+            |+ CAST(regexp_extract(iso, '^P(\\d+)DT(\\d+)H(\\d+)M(\\d+)S$', 4) AS BIGINT)"""
+            .stripMargin))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("parsed") =!= col("secs"), 1L).otherwise(0L))
+            .as("mismatches"),
+          sum("secs").as("seconds_mass"),
+          max(expr("secs DIV 86400")).as("max_days"))
+        .withColumn("roundtrip_exact", col("mismatches") === 0L)
+        .orderBy("event_type")
+    },
       """WITH t AS (
         |  SELECT event_type, CAST(FLOOR(value * 1000) AS BIGINT) AS secs
         |  FROM events),
@@ -2257,9 +2117,42 @@ object Round13cOps extends Family {
         |  CAST(SUM(secs) AS BIGINT) AS seconds_mass,
         |  CAST(MAX(secs // 86400) AS BIGINT) AS max_days,
         |  SUM(CASE WHEN parsed <> secs THEN 1 ELSE 0 END) = 0 AS roundtrip_exact
-        |FROM p GROUP BY 1 ORDER BY event_type""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY event_type""".stripMargin),
 
-    "mm_srt_timecode" ->
+    // SRT timecode round-trip — the subtitle-file serialization beside
+    // mm_subtitle_align: millisecond offsets rendered as the fixed-width
+    // HH:MM:SS,mmm cue stamp, re-parsed by position, round-trip proven;
+    // and because the rendering is FIXED-WIDTH, lexicographic MAX equals
+    // the numeric max — the graded `lex_is_numeric_max` column proves the
+    // property subtitle tooling silently relies on when sorting cue
+    // files as text (the same property fn_semver_latest proves violated
+    // for variable-width versions).
+    Op("mm_srt_timecode", (s, d) => {
+      Tables.events(s, d)
+        .select((col("user_id") % 8).as("principal"),
+          expr("CAST(FLOOR(value * 100000) AS BIGINT) % 86400000").as("ms"))
+        .withColumn("tc", expr(
+          """concat(lpad(CAST(ms DIV 3600000 AS STRING), 2, '0'), ':',
+            |  lpad(CAST(ms % 3600000 DIV 60000 AS STRING), 2, '0'), ':',
+            |  lpad(CAST(ms % 60000 DIV 1000 AS STRING), 2, '0'), ',',
+            |  lpad(CAST(ms % 1000 AS STRING), 3, '0'))""".stripMargin))
+        .withColumn("parsed", expr(
+          """CAST(substring(tc, 1, 2) AS BIGINT) * 3600000
+            |+ CAST(substring(tc, 4, 2) AS BIGINT) * 60000
+            |+ CAST(substring(tc, 7, 2) AS BIGINT) * 1000
+            |+ CAST(substring(tc, 10, 3) AS BIGINT)""".stripMargin))
+        .groupBy("principal")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("parsed") =!= col("ms"), 1L).otherwise(0L))
+            .as("mismatches"),
+          max("ms").as("max_ms"), max("tc").as("lex_max_tc"))
+        .withColumn("lex_is_numeric_max", expr(
+          """lex_max_tc = concat(lpad(CAST(max_ms DIV 3600000 AS STRING), 2, '0'), ':',
+            |  lpad(CAST(max_ms % 3600000 DIV 60000 AS STRING), 2, '0'), ':',
+            |  lpad(CAST(max_ms % 60000 DIV 1000 AS STRING), 2, '0'), ',',
+            |  lpad(CAST(max_ms % 1000 AS STRING), 3, '0'))""".stripMargin))
+        .orderBy("principal")
+    },
       """WITH t AS (
         |  SELECT user_id % 8 AS principal,
         |    CAST(FLOOR(value * 100000) AS BIGINT) % 86400000 AS ms
@@ -2286,9 +2179,37 @@ object Round13cOps extends Family {
         |    lpad(CAST(MAX(ms) % 3600000 // 60000 AS VARCHAR), 2, '0') || ':' ||
         |    lpad(CAST(MAX(ms) % 60000 // 1000 AS VARCHAR), 2, '0') || ',' ||
         |    lpad(CAST(MAX(ms) % 1000 AS VARCHAR), 3, '0') AS lex_is_numeric_max
-        |FROM p GROUP BY 1 ORDER BY principal""".stripMargin,
+        |FROM p GROUP BY 1 ORDER BY principal""".stripMargin),
 
-    "agg_segment_migration" ->
+    // RFM segment-migration matrix — the CRM follow-on to agg_rfm (which
+    // scores ONE period; retention marketing lives on the TRANSITIONS):
+    // customers tiered by spend in each half of the order history
+    // (1995–97 vs 1998+), the full-outer join yields the migration
+    // matrix with 'absent' pseudo-tiers for churned and newly-acquired
+    // customers; census per (from, to) cell with share ppm — the
+    // movement report a lifecycle team acts on.
+    Op("agg_segment_migration", (s, d) => {
+      def half(pred: org.apache.spark.sql.Column) = Tables.orders(s, d)
+        .where(pred)
+        .groupBy("o_custkey")
+        .agg(sum(expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).as("cents"))
+        .withColumn("tier",
+          when(col("cents") >= 30000000L, lit("high"))
+            .when(col("cents") >= 15000000L, lit("mid")).otherwise(lit("low")))
+      val p1 = half(col("o_orderdate") < "1998-01-01")
+        .select(col("o_custkey"), col("tier").as("tier_from"))
+      val p2 = half(col("o_orderdate") >= "1998-01-01")
+        .select(col("o_custkey"), col("tier").as("tier_to"))
+      val m = p1.join(p2, Seq("o_custkey"), "full")
+        .select(coalesce(col("tier_from"), lit("absent")).as("tier_from"),
+          coalesce(col("tier_to"), lit("absent")).as("tier_to"))
+      val tot = m.agg(count(lit(1)).as("total"))
+      m.groupBy("tier_from", "tier_to").agg(count(lit(1)).as("customers"))
+        .crossJoin(broadcast(tot))
+        .withColumn("share_ppm", expr("(customers * 1000000) DIV total"))
+        .select("tier_from", "tier_to", "customers", "share_ppm")
+        .orderBy("tier_from", "tier_to")
+    },
       """WITH h1 AS (
         |  SELECT o_custkey,
         |    CASE WHEN SUM(CAST(FLOOR(o_totalprice * 100) AS BIGINT)) >= 30000000 THEN 'high'
@@ -2309,6 +2230,6 @@ object Round13cOps extends Family {
         |SELECT tier_from, tier_to, CAST(COUNT(*) AS BIGINT) AS customers,
         |  (CAST(COUNT(*) AS BIGINT) * 1000000) // (SELECT total FROM tt)
         |    AS share_ppm
-        |FROM m GROUP BY 1, 2 ORDER BY tier_from, tier_to""".stripMargin
+        |FROM m GROUP BY 1, 2 ORDER BY tier_from, tier_to""".stripMargin)
   )
 }

@@ -15,7 +15,29 @@ import graft.Tables
   * (Splink-style) the identity stack's scoring layer lacked.
   */
 object Round15Ops extends Family {
-  val queries: Map[String, Q] = unique(
+  /** Shared DuckDB SQL for the FS EM fixture's blocked pattern census. */
+  private val fsEmPatternsSql: String =
+    """base AS (
+      |  SELECT CAST(c_custkey AS BIGINT) AS k,
+      |    CAST(c_nationkey AS BIGINT) AS city0,
+      |    'cust_' || lpad(CAST(c_custkey AS VARCHAR), 7, '0') AS name,
+      |    1950 + CAST(c_custkey AS BIGINT) % 50 AS yob0
+      |  FROM customer),
+      |m AS (SELECT k AS mk, name AS mname, city0 AS mcity, yob0 AS myob,
+      |    substring(name, 1, 11) AS block FROM base),
+      |dd AS (
+      |  SELECT k AS dk,
+      |    CASE WHEN k % 21 = 8 THEN substring(name, 1, 11) || 'X' ELSE name END AS dname,
+      |    CASE WHEN k % 15 = 2 THEN (city0 + 1) % 25 ELSE city0 END AS dcity,
+      |    CASE WHEN k % 9 = 5 THEN yob0 + 1 ELSE yob0 END AS dyob,
+      |    substring(name, 1, 11) AS block
+      |  FROM base),
+      |pat AS (
+      |  SELECT dname = mname AS gn, dcity = mcity AS gc, dyob = myob AS gy,
+      |    CAST(COUNT(*) AS BIGINT) AS cnt
+      |  FROM dd JOIN m ON dd.block = m.block GROUP BY 1, 2, 3)""".stripMargin
+
+  val ops: Seq[Op] = Seq(
     // EM-estimated Fellegi–Sunter m/u weights — join_fellegi_sunter scores
     // with DECLARED constants; every real linkage deployment learns the
     // per-field m (P(agree|match)) and u (P(agree|unmatch)) probabilities
@@ -35,7 +57,7 @@ object Round15Ops extends Family {
     // link/possible/non-link census they induce (0.9/0.1 thresholds), and
     // the learned parameters themselves. Round15Wave1Spec asserts the EM
     // recovers the planted drift rates.
-    "join_fs_em_weights" -> ((s, d) => {
+    Op("join_fs_em_weights", (s, d) => {
       val base = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"),
           col("c_nationkey").cast("bigint").as("city0"))
@@ -119,6 +141,41 @@ object Round15Ops extends Family {
           lit(null).cast("long").as("n_pairs"), col("value_ppm"))
       patterns.unionByName(classes).unionByName(params)
         .orderBy("kind", "key")
+    },
+      {
+      val init = """p0 AS (SELECT CAST(500000 AS BIGINT) AS pi,
+                   |  CAST(800000 AS BIGINT) AS mn, CAST(800000 AS BIGINT) AS mc,
+                   |  CAST(800000 AS BIGINT) AS my, CAST(200000 AS BIGINT) AS un,
+                   |  CAST(200000 AS BIGINT) AS uc, CAST(200000 AS BIGINT) AS uy)""".stripMargin
+      s"""WITH $fsEmPatternsSql,
+         |$init,
+         |${fsEmEstepSql("e1", "p0")},
+         |${fsEmMstepSql("p1", "e1")},
+         |${fsEmEstepSql("e2", "p1")},
+         |${fsEmMstepSql("p2", "e2")},
+         |${fsEmEstepSql("e3", "p2")},
+         |${fsEmMstepSql("p3", "e3")},
+         |${fsEmEstepSql("e4", "p3")}
+         |SELECT kind, key, n_pairs, value_ppm FROM (
+         |  SELECT 'pattern' AS kind,
+         |    (CASE WHEN gn THEN '1' ELSE '0' END)
+         |      || (CASE WHEN gc THEN '1' ELSE '0' END)
+         |      || (CASE WHEN gy THEN '1' ELSE '0' END) AS key,
+         |    cnt AS n_pairs, r AS value_ppm
+         |  FROM e4
+         |  UNION ALL
+         |  SELECT 'class' AS kind,
+         |    CASE WHEN r >= 900000 THEN 'link'
+         |      WHEN r >= 100000 THEN 'possible' ELSE 'non_link' END AS key,
+         |    CAST(SUM(cnt) AS BIGINT) AS n_pairs, CAST(NULL AS BIGINT) AS value_ppm
+         |  FROM e4 GROUP BY 2
+         |  UNION ALL
+         |  SELECT 'param' AS kind, u.key AS key,
+         |    CAST(NULL AS BIGINT) AS n_pairs, u.value_ppm AS value_ppm
+         |  FROM p3, LATERAL (VALUES
+         |    ('pi', pi), ('m_name', mn), ('m_city', mc), ('m_yob', my),
+         |    ('u_name', un), ('u_city', uc), ('u_yob', uy)) AS u(key, value_ppm)
+         |) ORDER BY kind, key""".stripMargin
     }),
 
     // Metadata-filtered ANN — the single most common production vector
@@ -137,7 +194,7 @@ object Round15Ops extends Family {
     // keep both engines' rankings identical; the data-scaled work is the
     // n·√n assignment + the filtered exact scan, everything downstream is
     // O(probes).
-    "llm_ann_filtered" -> ((s, d) => {
+    Op("llm_ann_filtered", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val nTot = e.agg(count(lit(1)).cast("double").as("n_tot"))
@@ -193,7 +250,73 @@ object Round15Ops extends Family {
             expr("(n_hits * 1000000) DIV NULLIF(n_truth, 0)"))
       grade("pre_filter", pre).unionByName(grade("post_filter", post))
         .orderBy("strategy", "probe_id")
-    }),
+    },
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+        |st AS (SELECT COUNT(*) AS n_tot FROM e),
+        |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
+        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
+        |               < 4294967296.0 / sqrt(n_tot * 1.0)),
+        |assigned AS (
+        |  SELECT vec_id, emb, cluster, vec_id % 10 = 3 AS pred FROM (
+        |    SELECT e.vec_id, e.emb, c.cid AS cluster,
+        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+        |        ORDER BY ROUND(list_cosine_similarity(e.emb, c.cemb), 4) DESC, c.cid) AS crn
+        |    FROM e CROSS JOIN cent c)
+        |  WHERE crn = 1),
+        |probes AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
+        |cells AS (
+        |  SELECT probe_id, p_emb, cluster FROM (
+        |    SELECT p.probe_id, p.p_emb, c.cid AS cluster,
+        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
+        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, c.cemb), 4) DESC, c.cid) AS prn
+        |    FROM probes p CROSS JOIN cent c)
+        |  WHERE prn <= 4),
+        |cand AS (
+        |  SELECT ce.probe_id, a.vec_id, a.pred,
+        |    ROUND(list_cosine_similarity(ce.p_emb, a.emb), 4) AS sim
+        |  FROM cells ce JOIN assigned a ON ce.cluster = a.cluster
+        |  WHERE a.vec_id <> ce.probe_id),
+        |pre AS (
+        |  SELECT probe_id, vec_id FROM (
+        |    SELECT probe_id, vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS r
+        |    FROM cand WHERE pred) q WHERE r <= 5),
+        |post AS (
+        |  SELECT probe_id, vec_id FROM (
+        |    SELECT probe_id, vec_id, pred,
+        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS r
+        |    FROM cand) q WHERE r <= 5 AND pred),
+        |truth AS (
+        |  SELECT probe_id, vec_id FROM (
+        |    SELECT p.probe_id, e.vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
+        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, e.emb), 4) DESC, e.vec_id) AS r
+        |    FROM probes p JOIN e ON e.vec_id % 10 = 3 AND e.vec_id <> p.probe_id) q
+        |  WHERE r <= 5),
+        |nt AS (SELECT probe_id, CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth GROUP BY 1),
+        |grade AS (
+        |  SELECT s.strategy, p.probe_id,
+        |    CAST(coalesce(f.ret, 0) AS BIGINT) AS n_returned,
+        |    CAST(coalesce(h.hits, 0) AS BIGINT) AS n_hits,
+        |    CAST(coalesce(nt.n_truth, 0) AS BIGINT) AS n_truth
+        |  FROM probes p
+        |  CROSS JOIN (VALUES ('pre_filter'), ('post_filter')) AS s(strategy)
+        |  LEFT JOIN (
+        |    SELECT 'pre_filter' AS strategy, probe_id, COUNT(*) AS ret FROM pre GROUP BY 2
+        |    UNION ALL
+        |    SELECT 'post_filter' AS strategy, probe_id, COUNT(*) AS ret FROM post GROUP BY 2
+        |  ) f ON f.strategy = s.strategy AND f.probe_id = p.probe_id
+        |  LEFT JOIN (
+        |    SELECT 'pre_filter' AS strategy, x.probe_id, COUNT(*) AS hits
+        |    FROM pre x JOIN truth t ON t.probe_id = x.probe_id AND t.vec_id = x.vec_id GROUP BY 2
+        |    UNION ALL
+        |    SELECT 'post_filter' AS strategy, x.probe_id, COUNT(*) AS hits
+        |    FROM post x JOIN truth t ON t.probe_id = x.probe_id AND t.vec_id = x.vec_id GROUP BY 2
+        |  ) h ON h.strategy = s.strategy AND h.probe_id = p.probe_id
+        |  LEFT JOIN nt ON nt.probe_id = p.probe_id)
+        |SELECT strategy, probe_id, n_returned, n_hits, n_truth,
+        |  (n_hits * 1000000) // NULLIF(n_truth, 0) AS recall_ppm
+        |FROM grade ORDER BY strategy, probe_id""".stripMargin),
 
     // Incremental entity resolution — the serving half join_identity_clusters
     // (batch-only) lacked: a PERSISTED golden-record index (one cluster per
@@ -211,7 +334,7 @@ object Round15Ops extends Family {
     // the full 420 score — rerun_minted must be 0. Cost per batch is
     // O(batch × block) at any corpus size; the full-corpus work is the one
     // index write.
-    "join_er_incremental" -> ((s, d) => {
+    Op("join_er_incremental", (s, d) => {
       val base = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"),
           col("c_nationkey").cast("bigint").as("city0"))
@@ -271,7 +394,43 @@ object Round15Ops extends Family {
         .unionByName(stat("06_rerun_linked", pass2.where(col("linked_cluster").isNotNull), Some("lscore")))
         .unionByName(stat("07_rerun_minted", pass2.where(col("linked_cluster").isNull), None))
         .orderBy("step")
-    }),
+    },
+      s"""WITH base AS (
+         |  SELECT CAST(c_custkey AS BIGINT) AS k,
+         |    CAST(c_nationkey AS BIGINT) AS city0,
+         |    'cust_' || lpad(CAST(c_custkey AS VARCHAR), 7, '0') AS name,
+         |    1950 + CAST(c_custkey AS BIGINT) % 50 AS yob0
+         |  FROM customer),
+         |idx0 AS (SELECT k AS cluster_id, name, city0 AS city, yob0 AS yob,
+         |    substring(name, 1, 11) AS block FROM base),
+         |batch AS (
+         |  SELECT k,
+         |    CASE WHEN k % 2 = 0 THEN name
+         |      ELSE 'newp_' || lpad(CAST(k AS VARCHAR), 7, '0') END AS bname,
+         |    CASE WHEN k % 2 = 0 AND k % 15 = 2 THEN (city0 + 1) % 25 ELSE city0 END AS bcity,
+         |    CASE WHEN k % 2 = 0 AND k % 9 = 5 THEN yob0 + 1 ELSE yob0 END AS byob
+         |  FROM base WHERE k % 23 = 7),
+         |b2 AS (SELECT k, bname, bcity, byob, substring(bname, 1, 11) AS bblock FROM batch),
+         |${erLinkPassSql("p1", "idx0")},
+         |minted AS (SELECT k + 2000000000 AS cluster_id, bname AS name,
+         |    bcity AS city, byob AS yob, bblock AS block
+         |  FROM p1 WHERE linked_cluster IS NULL),
+         |idx2 AS (SELECT * FROM idx0 UNION ALL SELECT * FROM minted),
+         |${erLinkPassSql("p2", "idx2")}
+         |SELECT step, n, score_mass FROM (
+         |  SELECT '01_clusters_before' AS step, CAST(COUNT(*) AS BIGINT) AS n,
+         |    CAST(NULL AS BIGINT) AS score_mass FROM idx0
+         |  UNION ALL SELECT '02_batch', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT) FROM b2
+         |  UNION ALL SELECT '03_linked', CAST(COUNT(*) AS BIGINT),
+         |    CAST(coalesce(SUM(lscore), 0) AS BIGINT) FROM p1 WHERE linked_cluster IS NOT NULL
+         |  UNION ALL SELECT '04_minted', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT)
+         |    FROM p1 WHERE linked_cluster IS NULL
+         |  UNION ALL SELECT '05_clusters_after', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT) FROM idx2
+         |  UNION ALL SELECT '06_rerun_linked', CAST(COUNT(*) AS BIGINT),
+         |    CAST(coalesce(SUM(lscore), 0) AS BIGINT) FROM p2 WHERE linked_cluster IS NOT NULL
+         |  UNION ALL SELECT '07_rerun_minted', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT)
+         |    FROM p2 WHERE linked_cluster IS NULL
+         |) ORDER BY step""".stripMargin),
 
     // Hierarchical (multi-layer) HNSW — the upper layers llm_ann_hnsw's
     // single-layer NSW lacked (round-14 "What's missing" #4): layer
@@ -286,7 +445,7 @@ object Round15Ops extends Family {
     // recall@5 vs the exact scan; rounded sims + id tie-breaks keep both
     // engines' descents identical. Data-scaled work is the exact-scan
     // recall baseline; the search itself is O(probes · beam · degree).
-    "llm_ann_hnsw_layered" -> ((s, d) => {
+    Op("llm_ann_hnsw_layered", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val n = math.max(1L, e.count())
@@ -338,7 +497,44 @@ object Round15Ops extends Family {
         .select(col("probe_id"), col("entry_l0"), col("n_visited"), col("n_hits"),
           expr("n_hits * 200000").as("recall_ppm"))
         .orderBy("probe_id")
-    }),
+    },
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+         |nn AS (SELECT COUNT(*) AS n, (COUNT(*) + 15) // 16 AS n2,
+         |       (COUNT(*) + 3) // 4 AS n1 FROM e),
+         |p AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
+         |b3 AS (SELECT probe_id, CAST(0 AS BIGINT) AS node FROM p),
+         |${layerHopSql("u2", "b3", 2, "n2", 16L, 4, 1)},
+         |${layerHopSql("u1", "bu2", 1, "n1", 4L, 4, 1)},
+         |${layerHopSql("01", "bu1", 0, "n", 1L, 8, 8)},
+         |${layerHopSql("02", "b01", 0, "n", 1L, 8, 8)},
+         |visited AS (
+         |  SELECT probe_id, node, MAX(sim) AS sim FROM (
+         |    SELECT * FROM su2 UNION ALL SELECT * FROM su1
+         |    UNION ALL SELECT * FROM s01 UNION ALL SELECT * FROM s02) u
+         |  GROUP BY 1, 2),
+         |found5 AS (
+         |  SELECT probe_id, node FROM (
+         |    SELECT probe_id, node,
+         |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, node) AS r
+         |    FROM visited) q WHERE r <= 5),
+         |exact5 AS (
+         |  SELECT probe_id, node FROM (
+         |    SELECT p.probe_id, e.vec_id AS node,
+         |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
+         |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, e.emb), 4) DESC, e.vec_id) AS r
+         |    FROM p JOIN e ON e.vec_id <> p.probe_id) q WHERE r <= 5),
+         |hits AS (
+         |  SELECT x.probe_id,
+         |    CAST(SUM(CASE WHEN f.node IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+         |  FROM exact5 x LEFT JOIN found5 f
+         |    ON f.probe_id = x.probe_id AND f.node = x.node
+         |  GROUP BY 1),
+         |vs AS (SELECT probe_id, CAST(COUNT(*) AS BIGINT) AS n_visited FROM visited GROUP BY 1)
+         |SELECT vs.probe_id, bu1.node AS entry_l0, vs.n_visited, h.n_hits,
+         |  h.n_hits * 200000 AS recall_ppm
+         |FROM vs JOIN bu1 ON bu1.probe_id = vs.probe_id
+         |JOIN hits h ON h.probe_id = vs.probe_id
+         |ORDER BY vs.probe_id""".stripMargin),
 
     // Nickname canonicalization — the name-standardization step every
     // person matcher runs BEFORE blocking (BILL and WILLIAM must block
@@ -350,7 +546,7 @@ object Round15Ops extends Family {
     // nickname-resolved records, distinct raw spellings unified — the
     // block-key consolidation the table buys. Linear projection +
     // broadcast join + rollup.
-    "fn_nickname_resolve" -> ((s, d) => {
+    Op("fn_nickname_resolve", (s, d) => {
       val pool = array(lit("WILLIAM"), lit("BILL"), lit("WILL"),
         lit("ROBERT"), lit("BOB"), lit("ROB"),
         lit("MARGARET"), lit("PEGGY"), lit("MEG"),
@@ -381,7 +577,26 @@ object Round15Ops extends Family {
           sum(when(col("canon").isNotNull, 1L).otherwise(0L)).as("n_from_nick"),
           countDistinct("raw").as("n_spellings"))
         .orderBy("canonical")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT ['WILLIAM','BILL','WILL','ROBERT','BOB','ROB',
+        |          'MARGARET','PEGGY','MEG','JOHN','JACK','JOHNNY',
+        |          'ELIZABETH','BETH','LIZ','KATHERINE','KATE','KITTY']
+        |      [CAST(c_custkey % 18 AS INT) + 1] AS raw
+        |  FROM customer),
+        |nicks(nick, canon) AS (VALUES
+        |  ('BILL', 'WILLIAM'), ('WILL', 'WILLIAM'),
+        |  ('BOB', 'ROBERT'), ('ROB', 'ROBERT'),
+        |  ('PEGGY', 'MARGARET'), ('MEG', 'MARGARET'),
+        |  ('JACK', 'JOHN'), ('JOHNNY', 'JOHN'),
+        |  ('BETH', 'ELIZABETH'), ('LIZ', 'ELIZABETH'),
+        |  ('KATE', 'KATHERINE'), ('KITTY', 'KATHERINE')),
+        |r AS (SELECT raw, canon FROM t LEFT JOIN nicks ON t.raw = nicks.nick)
+        |SELECT coalesce(canon, raw) AS canonical,
+        |  CAST(COUNT(*) AS BIGINT) AS n_records,
+        |  CAST(SUM(CASE WHEN canon IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_from_nick,
+        |  CAST(COUNT(DISTINCT raw) AS BIGINT) AS n_spellings
+        |FROM r GROUP BY 1 ORDER BY canonical""".stripMargin),
 
     // Money-mule network detection — the AML graph screen beside
     // agg_txn_structuring (amounts) and join_sanctions_screen (names):
@@ -395,7 +610,7 @@ object Round15Ops extends Family {
     // mule pass-through conserves: mule in_mass == out_mass, asserted in
     // the wave spec), max degrees. Two degree rollups + one full outer
     // join — linear, no pairwise graph work.
-    "join_mule_network" -> ((s, d) => {
+    Op("join_mule_network", (s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"))
         .withColumn("cents", expr(
@@ -435,7 +650,42 @@ object Round15Ops extends Family {
           sum("in_mass").as("in_mass"), sum("out_mass").as("out_mass"),
           max("in_deg").as("max_in_deg"), max("out_deg").as("max_out_deg"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH ev AS (
+        |  SELECT event_id, user_id,
+        |    ${duckMd5Bits("amt", "event_id", 6)} % 100000 AS cents
+        |  FROM events),
+        |edges AS (
+        |  SELECT 'u' || CAST(user_id AS VARCHAR) AS src,
+        |    md5('org:' || CAST(event_id AS VARCHAR)) AS dst, cents
+        |  FROM ev WHERE event_id % 29 <> 11
+        |  UNION ALL
+        |  SELECT 'u' || CAST(user_id AS VARCHAR),
+        |    'mule' || CAST(event_id % 3 AS VARCHAR), cents
+        |  FROM ev WHERE event_id % 29 = 11
+        |  UNION ALL
+        |  SELECT 'mule' || CAST(event_id % 3 AS VARCHAR),
+        |    md5('cash:' || CAST(event_id % 3 AS VARCHAR) || ':' || CAST(event_id % 5 AS VARCHAR)),
+        |    cents
+        |  FROM ev WHERE event_id % 29 = 11),
+        |outs AS (SELECT src AS acct, CAST(COUNT(DISTINCT dst) AS BIGINT) AS out_deg,
+        |    CAST(SUM(cents) AS BIGINT) AS out_mass FROM edges GROUP BY 1),
+        |ins AS (SELECT dst AS acct, CAST(COUNT(DISTINCT src) AS BIGINT) AS in_deg,
+        |    CAST(SUM(cents) AS BIGINT) AS in_mass FROM edges GROUP BY 1),
+        |acct AS (
+        |  SELECT coalesce(o.acct, i.acct) AS acct,
+        |    coalesce(out_deg, 0) AS out_deg, coalesce(out_mass, 0) AS out_mass,
+        |    coalesce(in_deg, 0) AS in_deg, coalesce(in_mass, 0) AS in_mass
+        |  FROM outs o FULL OUTER JOIN ins i ON o.acct = i.acct)
+        |SELECT CASE WHEN in_deg >= 3 AND out_deg >= 2 THEN 'mule'
+        |    WHEN in_deg = 0 THEN 'payer'
+        |    WHEN out_deg = 0 THEN 'sink' ELSE 'passthrough' END AS cls,
+        |  CAST(COUNT(*) AS BIGINT) AS n_accounts,
+        |  CAST(SUM(in_mass) AS BIGINT) AS in_mass,
+        |  CAST(SUM(out_mass) AS BIGINT) AS out_mass,
+        |  CAST(MAX(in_deg) AS BIGINT) AS max_in_deg,
+        |  CAST(MAX(out_deg) AS BIGINT) AS max_out_deg
+        |FROM acct GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Count-Min sketch — the sublinear heavy-hitter counter every
     // streaming telemetry plane runs when exact per-key counts can't fit
@@ -447,7 +697,7 @@ object Round15Ops extends Family {
     // hitters at ~13% each + one rare key) the exact true count, the CM
     // estimate, and the overestimate. Deterministic md5 hash family →
     // DuckDB replays the sketch bit-for-bit.
-    "agg_count_min" -> ((s, d) => {
+    Op("agg_count_min", (s, d) => {
       val items = Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("key", expr(
@@ -473,7 +723,30 @@ object Round15Ops extends Family {
         .withColumn("overestimate", col("estimate") - col("true_count"))
         .select("key", "true_count", "estimate", "overestimate")
         .orderBy("key")
-    }),
+    },
+      s"""WITH items AS (
+        |  SELECT CASE WHEN event_id % 3 < 2 THEN 'hh' || CAST(event_id % 5 AS VARCHAR)
+        |    WHEN event_id % 997 = 5 THEN 'rare'
+        |    ELSE 'k' || CAST(${duckMd5Bits("ck", "event_id", 6)} % 5000 AS VARCHAR)
+        |  END AS key
+        |  FROM events),
+        |sketch AS (
+        |  SELECT i.range AS i,
+        |    ${duckMd5Bits("'cm' || CAST(i.range AS VARCHAR) || ':' || key", 8)} % 256 AS slot,
+        |    CAST(COUNT(*) AS BIGINT) AS cnt
+        |  FROM items CROSS JOIN range(0, 4) i GROUP BY 1, 2),
+        |probes AS (
+        |  SELECT key, i.range AS i,
+        |    ${duckMd5Bits("'cm' || CAST(i.range AS VARCHAR) || ':' || key", 8)} % 256 AS slot
+        |  FROM (SELECT unnest(['hh0','hh1','hh2','hh3','hh4','rare']) AS key) pk
+        |  CROSS JOIN range(0, 4) i),
+        |est AS (
+        |  SELECT p.key, CAST(MIN(s.cnt) AS BIGINT) AS estimate
+        |  FROM probes p JOIN sketch s ON s.i = p.i AND s.slot = p.slot GROUP BY 1),
+        |tr AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS true_count FROM items GROUP BY 1)
+        |SELECT e.key, t.true_count, e.estimate,
+        |  e.estimate - t.true_count AS overestimate
+        |FROM est e JOIN tr t ON t.key = e.key ORDER BY e.key""".stripMargin),
 
     // Deterministic reservoir sample — the fixed-k uniform sample every
     // profiling/debug path needs from an unbounded table: priority =
@@ -483,7 +756,7 @@ object Round15Ops extends Family {
     // on both engines. Graded: the sample's per-bucket (id % 5)
     // composition and exact id mass — any divergence in the priority
     // order breaks the rollup.
-    "agg_reservoir_sample" -> ((s, d) => {
+    Op("agg_reservoir_sample", (s, d) => {
       Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("id"))
         .withColumn("pri", expr("md5(concat('rs:', CAST(id AS STRING)))"))
@@ -492,7 +765,15 @@ object Round15Ops extends Family {
         .agg(count(lit(1)).as("n_sampled"), sum("id").as("id_mass"),
           min("id").as("min_id"))
         .orderBy("bucket")
-    }),
+    },
+      """WITH sm AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS id
+        |  FROM orders
+        |  ORDER BY md5('rs:' || CAST(o_orderkey AS VARCHAR)), CAST(o_orderkey AS BIGINT)
+        |  LIMIT 100)
+        |SELECT id % 5 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_sampled,
+        |  CAST(SUM(id) AS BIGINT) AS id_mass, CAST(MIN(id) AS BIGINT) AS min_id
+        |FROM sm GROUP BY 1 ORDER BY bucket""".stripMargin),
 
     // t-closeness audit — the third leg of the privacy triad beside
     // k-anonymity (class size) and l-diversity (distinct sensitive
@@ -503,7 +784,7 @@ object Round15Ops extends Family {
     // plants a 70% skew toward value 0 (the attribute-disclosure leak
     // t-closeness exists to catch) and must exceed the 300 000-ppm bar.
     // Two rollups + one broadcast global join — linear.
-    "warehouse_t_closeness" -> ((s, d) => {
+    Op("warehouse_t_closeness", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("qi", (col("k") % 8).cast("int"))
@@ -530,7 +811,26 @@ object Round15Ops extends Family {
         .withColumn("leaky", col("tvd_ppm") > 300000L)
         .select("qi", "n_persons", "tvd_ppm", "leaky")
         .orderBy("qi")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(c_custkey % 8 AS INT) AS qi,
+        |    ${duckMd5Bits("sv", "c_custkey", 6)} AS g
+        |  FROM customer),
+        |x AS (SELECT qi, CASE WHEN qi = 3 AND g % 100 < 70 THEN 0 ELSE g % 5 END AS sv FROM t),
+        |cls AS (SELECT qi, sv, CAST(COUNT(*) AS BIGINT) AS c_cs FROM x GROUP BY 1, 2),
+        |gdist AS (SELECT sv, CAST(COUNT(*) AS BIGINT) AS g_s FROM x GROUP BY 1),
+        |sizes AS (SELECT qi, CAST(SUM(c_cs) AS BIGINT) AS n_c FROM cls GROUP BY 1),
+        |nt AS (SELECT CAST(SUM(g_s) AS BIGINT) AS n_tot FROM gdist),
+        |grid AS (
+        |  SELECT z.qi, z.n_c, gl.sv, gl.g_s, nt.n_tot, coalesce(c.c_cs, 0) AS c_cs
+        |  FROM sizes z CROSS JOIN gdist gl CROSS JOIN nt
+        |  LEFT JOIN cls c ON c.qi = z.qi AND c.sv = gl.sv)
+        |SELECT qi, CAST(MAX(n_c) AS BIGINT) AS n_persons,
+        |  CAST((SUM(abs(c_cs * n_tot - g_s * n_c)) * 1000000)
+        |    // (2 * MAX(n_c) * MAX(n_tot)) AS BIGINT) AS tvd_ppm,
+        |  CAST((SUM(abs(c_cs * n_tot - g_s * n_c)) * 1000000)
+        |    // (2 * MAX(n_c) * MAX(n_tot)) AS BIGINT) > 300000 AS leaky
+        |FROM grid GROUP BY 1 ORDER BY qi""".stripMargin),
 
     // Interrupted time series — the pre/post causal read on a KPI when
     // there is no control group (the deploy-went-out-at-bucket-24 story):
@@ -542,7 +842,7 @@ object Round15Ops extends Family {
     // bucket 24 a +5000-cent level shift AND a +300 slope break — the
     // segmented fit must read both. Per (cohort, segment): buckets, mean
     // milli, slope micro. Two rollups — linear.
-    "agg_interrupted_ts" -> ((s, d) => {
+    Op("agg_interrupted_ts", (s, d) => {
       val byBucket = Tables.events(s, d)
         .select(col("event_id"), col("user_id"))
         .withColumn("b", (col("event_id") % 48).cast("bigint"))
@@ -562,7 +862,22 @@ object Round15Ops extends Family {
                  | DIV (CAST(COUNT(*) AS DECIMAL(38,0)) * SUM(b * b) - SUM(b) * SUM(b)) AS BIGINT)""".stripMargin)
             .as("slope_micro"))
         .orderBy("cohort", "segment")
-    }),
+    },
+      s"""WITH e AS (
+        |  SELECT event_id % 48 AS b, CAST(user_id % 3 AS INT) AS cohort,
+        |    10000 + (event_id % 48) * 200
+        |      + CASE WHEN event_id % 48 >= 24 THEN 5000 + (event_id % 48 - 24) * 300 ELSE 0 END
+        |      + ${duckMd5Bits("n", "event_id", 6)} % 200 AS cents
+        |  FROM events),
+        |bk AS (
+        |  SELECT cohort, b, CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS y
+        |  FROM e GROUP BY 1, 2),
+        |seg AS (SELECT cohort, CASE WHEN b < 24 THEN 'pre' ELSE 'post' END AS segment, b, y FROM bk)
+        |SELECT cohort, segment, CAST(COUNT(*) AS BIGINT) AS n_buckets,
+        |  CAST(SUM(y) // COUNT(*) AS BIGINT) AS y_mean_milli,
+        |  CAST((CAST(COUNT(*) AS HUGEINT) * SUM(b * y) - CAST(SUM(b) AS HUGEINT) * SUM(y)) * 1000000
+        |    // (CAST(COUNT(*) AS HUGEINT) * SUM(b * b) - CAST(SUM(b) AS HUGEINT) * SUM(b)) AS BIGINT) AS slope_micro
+        |FROM seg GROUP BY 1, 2 ORDER BY cohort, segment""".stripMargin),
 
     // Synthetic control by donor matching — the program-evaluation shape
     // when ONE unit is treated and the counterfactual must be assembled
@@ -575,7 +890,7 @@ object Round15Ops extends Family {
     // residual level mismatch). Unit 0 plants a +4000-cent post effect.
     // Graded per donor: pre L1 mass, selection, and the att estimate on
     // the selected row. Bucket rollup + broadcast treated join — linear.
-    "agg_synthetic_control" -> ((s, d) => {
+    Op("agg_synthetic_control", (s, d) => {
       val byUnit = Tables.events(s, d)
         .select(col("event_id"), col("user_id"))
         .withColumn("unit", (col("user_id") % 8).cast("bigint"))
@@ -609,7 +924,30 @@ object Round15Ops extends Family {
           when(col("selected"), col("post_gap_mass") - col("pre_gap_mass")))
         .select("unit", "pre_l1_mass", "selected", "att_mass")
         .orderBy("unit")
-    }),
+    },
+      s"""WITH e AS (
+        |  SELECT user_id % 8 AS unit, event_id % 24 AS b,
+        |    10000 + (event_id % 24) * 100
+        |      + ${duckMd5Bits("lv", "user_id % 8", 6)} % 2000
+        |      + CASE WHEN user_id % 8 = 0 AND event_id % 24 >= 12 THEN 4000 ELSE 0 END
+        |      + ${duckMd5Bits("sc", "event_id", 6)} % 200 AS cents
+        |  FROM events),
+        |bu AS (SELECT unit, b, CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS y
+        |  FROM e GROUP BY 1, 2),
+        |tr AS (SELECT b, y AS y0 FROM bu WHERE unit = 0),
+        |dn AS (
+        |  SELECT d.unit,
+        |    CAST(SUM(CASE WHEN d.b < 12 THEN abs(d.y - t.y0) ELSE 0 END) AS BIGINT) AS pre_l1_mass,
+        |    CAST(SUM(CASE WHEN d.b < 12 THEN t.y0 - d.y ELSE 0 END) AS BIGINT) AS pre_gap_mass,
+        |    CAST(SUM(CASE WHEN d.b >= 12 THEN t.y0 - d.y ELSE 0 END) AS BIGINT) AS post_gap_mass
+        |  FROM bu d JOIN tr t ON t.b = d.b WHERE d.unit <> 0 GROUP BY 1),
+        |rk AS (
+        |  SELECT unit, pre_l1_mass, pre_gap_mass, post_gap_mass,
+        |    ROW_NUMBER() OVER (ORDER BY pre_l1_mass, unit) AS r
+        |  FROM dn)
+        |SELECT unit, pre_l1_mass, r = 1 AS selected,
+        |  CASE WHEN r = 1 THEN post_gap_mass - pre_gap_mass END AS att_mass
+        |FROM rk ORDER BY unit""".stripMargin),
 
     // Two-model uplift (incrementality) — the causal segmentation every
     // retention campaign needs: md5 1:1 treatment assignment over four
@@ -620,7 +958,7 @@ object Round15Ops extends Family {
     // and their difference — positive uplift isolates the persuadables
     // (the only segment worth the contact cost), negative exposes the
     // sleeping dogs a blanket campaign damages. One conditional rollup.
-    "agg_uplift_twomodel" -> ((s, d) => {
+    Op("agg_uplift_twomodel", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("segment", (col("k") % 4).cast("int"))
@@ -642,7 +980,28 @@ object Round15Ops extends Family {
         .withColumn("uplift_ppm", expr(
           "(resp_t * 1000000) DIV NULLIF(n_treated, 0) - (resp_c * 1000000) DIV NULLIF(n_control, 0)"))
         .orderBy("segment")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(c_custkey % 4 AS INT) AS segment,
+        |    ${duckMd5Bits("tr", "c_custkey", 6)} % 2 = 1 AS treated,
+        |    ${duckMd5Bits("fl", "c_custkey", 6)} % 10 = 0 AS flip
+        |  FROM customer),
+        |r AS (
+        |  SELECT segment, treated,
+        |    (CASE segment WHEN 0 THEN TRUE WHEN 1 THEN treated
+        |      WHEN 2 THEN FALSE ELSE NOT treated END) <> flip AS resp
+        |  FROM t),
+        |m AS (
+        |  SELECT segment,
+        |    CAST(SUM(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT) AS n_treated,
+        |    CAST(SUM(CASE WHEN NOT treated THEN 1 ELSE 0 END) AS BIGINT) AS n_control,
+        |    CAST(SUM(CASE WHEN treated AND resp THEN 1 ELSE 0 END) AS BIGINT) AS resp_t,
+        |    CAST(SUM(CASE WHEN NOT treated AND resp THEN 1 ELSE 0 END) AS BIGINT) AS resp_c
+        |  FROM r GROUP BY 1)
+        |SELECT segment, n_treated, n_control, resp_t, resp_c,
+        |  (resp_t * 1000000) // NULLIF(n_treated, 0)
+        |    - (resp_c * 1000000) // NULLIF(n_control, 0) AS uplift_ppm
+        |FROM m ORDER BY segment""".stripMargin),
 
     // Sliding-window-counter rate limiter — the Cloudflare-style
     // estimator every API gateway actually deploys (a true rolling log is
@@ -656,7 +1015,7 @@ object Round15Ops extends Family {
     // windows dominate the over-limit census at the 8-request bar. Per
     // cohort: windows, over-limit windows, estimate mass — the
     // shed-traffic sizing. Two rollups + one equi-join, linear.
-    "service_sliding_window_limit" -> ((s, d) => {
+    Op("service_sliding_window_limit", (s, d) => {
       val req = Tables.events(s, d)
         .select(col("user_id"), col("event_id"))
         // cohort-0 principals absorb a planted burst: events re-keyed so
@@ -680,7 +1039,23 @@ object Round15Ops extends Family {
           sum("est_milli").as("est_mass_milli"))
         .withColumn("over_ppm", expr("(n_over * 1000000) DIV n_windows"))
         .orderBy("cohort")
-    }),
+    },
+      """WITH req AS (
+        |  SELECT CASE WHEN event_id % 3 = 0 THEN (user_id // 5) * 5 ELSE user_id END AS principal,
+        |    event_id % 24 AS w
+        |  FROM events),
+        |cnt AS (SELECT principal, w, CAST(COUNT(*) AS BIGINT) AS cur FROM req GROUP BY 1, 2),
+        |est AS (
+        |  SELECT c.principal, c.w, c.cur,
+        |    coalesce(p.cur, 0) * 500 + c.cur * 1000 AS est_milli
+        |  FROM cnt c LEFT JOIN cnt p ON p.principal = c.principal AND p.w = c.w - 1)
+        |SELECT principal % 5 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_windows,
+        |  CAST(SUM(CASE WHEN est_milli > 8000 THEN 1 ELSE 0 END) AS BIGINT) AS n_over,
+        |  CAST(SUM(cur) AS BIGINT) AS n_requests,
+        |  CAST(SUM(est_milli) AS BIGINT) AS est_mass_milli,
+        |  CAST((SUM(CASE WHEN est_milli > 8000 THEN 1 ELSE 0 END) * 1000000)
+        |    // COUNT(*) AS BIGINT) AS over_ppm
+        |FROM est GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Retry-budget accounting — the Finagle/Envoy 20%-budget rule that
     // stops retry storms (unbounded retries turn a 15% failure blip into
@@ -689,7 +1064,7 @@ object Round15Ops extends Family {
     // granted = min(failures, budget), and the overflow census — failures
     // the budget refused to retry, the load-shed a storm would have
     // amplified. Exact integer budget arithmetic; one rollup.
-    "service_retry_budget" -> ((s, d) => {
+    Op("service_retry_budget", (s, d) => {
       Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 4).as("svc"))
         .withColumn("failed", expr(
@@ -704,7 +1079,22 @@ object Round15Ops extends Family {
         .withColumn("budget_util_ppm",
           expr("(retries_granted * 1000000) DIV NULLIF(budget, 0)"))
         .orderBy("svc")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT user_id % 4 AS svc,
+        |    ${duckMd5Bits("rf", "event_id", 6)} % 100
+        |      < CASE WHEN user_id % 4 = 2 THEN 35 ELSE 15 END AS failed
+        |  FROM events),
+        |m AS (SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_requests,
+        |    CAST(SUM(CASE WHEN failed THEN 1 ELSE 0 END) AS BIGINT) AS n_failures
+        |  FROM t GROUP BY 1)
+        |SELECT svc, n_requests, n_failures,
+        |  (n_requests * 20) // 100 AS budget,
+        |  least(n_failures, (n_requests * 20) // 100) AS retries_granted,
+        |  n_failures - least(n_failures, (n_requests * 20) // 100) AS refused,
+        |  CAST((least(n_failures, (n_requests * 20) // 100) * 1000000)
+        |    // NULLIF((n_requests * 20) // 100, 0) AS BIGINT) AS budget_util_ppm
+        |FROM m ORDER BY svc""".stripMargin),
 
     // Apdex score — the user-satisfaction index SLO reviews quote
     // (satisfied ≤ T, tolerating ≤ 4T, apdex = (sat + tol/2) / n): md5
@@ -712,7 +1102,7 @@ object Round15Ops extends Family {
     // +800 ms regression, the score exact in milli-Apdex
     // ((sat·1000 + tol·500) DIV n — no floats). Per service: census +
     // the milli score. One conditional rollup.
-    "agg_apdex" -> ((s, d) => {
+    Op("agg_apdex", (s, d) => {
       Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 4).as("svc"))
         .withColumn("lat_ms", expr(
@@ -727,7 +1117,20 @@ object Round15Ops extends Family {
         .withColumn("apdex_milli",
           expr("(n_satisfied * 1000 + n_tolerating * 500) DIV n_requests"))
         .orderBy("svc")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT user_id % 4 AS svc,
+        |    ${duckMd5Bits("ap", "event_id", 6)} % 2000
+        |      + CASE WHEN user_id % 4 = 3 THEN 800 ELSE 0 END AS lat_ms
+        |  FROM events)
+        |SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_requests,
+        |  CAST(SUM(CASE WHEN lat_ms <= 300 THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
+        |  CAST(SUM(CASE WHEN lat_ms > 300 AND lat_ms <= 1200 THEN 1 ELSE 0 END) AS BIGINT) AS n_tolerating,
+        |  CAST(SUM(CASE WHEN lat_ms > 1200 THEN 1 ELSE 0 END) AS BIGINT) AS n_frustrated,
+        |  CAST((SUM(CASE WHEN lat_ms <= 300 THEN 1 ELSE 0 END) * 1000
+        |    + SUM(CASE WHEN lat_ms > 300 AND lat_ms <= 1200 THEN 1 ELSE 0 END) * 500)
+        |    // COUNT(*) AS BIGINT) AS apdex_milli
+        |FROM t GROUP BY 1 ORDER BY svc""".stripMargin),
 
     // Read-repair census — the quorum-read side effect service_quorum_
     // staleness doesn't cover (it measures staleness; this measures the
@@ -738,7 +1141,7 @@ object Round15Ops extends Family {
     // shard: reads, divergent reads, repair-write mass (version gap) —
     // the background write amplification quorum reads pay. One projection
     // + rollup, linear.
-    "service_read_repair" -> ((s, d) => {
+    Op("service_read_repair", (s, d) => {
       val t = Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 8).as("shard"))
         .withColumn("v_latest", expr(
@@ -763,7 +1166,34 @@ object Round15Ops extends Family {
           sum(greatest(col("va"), col("vb"))).as("resolved_version_mass"))
         .withColumn("divergent_ppm", expr("(n_divergent * 1000000) DIV n_reads"))
         .orderBy("shard")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT event_id, user_id % 8 AS shard,
+        |    ${duckMd5Bits("vw", "event_id", 6)} % 50 + 10 AS v_latest
+        |  FROM events),
+        |r AS (
+        |  SELECT shard, event_id, v_latest,
+        |    CASE WHEN ${duckMd5Bits("lag0", "event_id", 6)} % 3 = 0
+        |      THEN v_latest - (${duckMd5Bits("gap0", "event_id", 6)} % 5 + 1)
+        |      ELSE v_latest END AS r0,
+        |    CASE WHEN ${duckMd5Bits("lag1", "event_id", 6)} % 4 = 0
+        |      THEN v_latest - (${duckMd5Bits("gap1", "event_id", 6)} % 5 + 1)
+        |      ELSE v_latest END AS r1,
+        |    CASE WHEN ${duckMd5Bits("lag2", "event_id", 6)} % 5 = 0
+        |      THEN v_latest - (${duckMd5Bits("gap2", "event_id", 6)} % 5 + 1)
+        |      ELSE v_latest END AS r2,
+        |    ${duckMd5Bits("pk", "event_id", 6)} % 3 AS pick
+        |  FROM t),
+        |p AS (SELECT shard,
+        |    CASE WHEN pick = 0 THEN r1 ELSE r0 END AS va,
+        |    CASE WHEN pick = 2 THEN r1 ELSE r2 END AS vb
+        |  FROM r)
+        |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_reads,
+        |  CAST(SUM(CASE WHEN va <> vb THEN 1 ELSE 0 END) AS BIGINT) AS n_divergent,
+        |  CAST(SUM(abs(va - vb)) AS BIGINT) AS repair_gap_mass,
+        |  CAST(SUM(greatest(va, vb)) AS BIGINT) AS resolved_version_mass,
+        |  CAST((SUM(CASE WHEN va <> vb THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS divergent_ppm
+        |FROM p GROUP BY 1 ORDER BY shard""".stripMargin),
 
     // Merkle-tree anti-entropy — the replica-sync protocol (Dynamo/
     // Cassandra repair) that finds divergent key ranges in O(log n)
@@ -775,7 +1205,7 @@ object Round15Ops extends Family {
     // nodes — the comparison frontier — plus the leaf-level transfer
     // census the protocol ends with (keys in differing leaves vs total:
     // the bandwidth anti-entropy saves). Pure rollups per level.
-    "fn_merkle_antientropy" -> ((s, d) => {
+    Op("fn_merkle_antientropy", (s, d) => {
       val keys = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("leaf", expr(
@@ -814,7 +1244,39 @@ object Round15Ops extends Family {
           lit(null).cast("long").as("n_differing"),
           col("n_keys_transferred"), col("n_keys_total"))
       levels.unionByName(transfer).orderBy("level")
-    }),
+    },
+      s"""WITH ks AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    ${duckMd5Bits("mk", "o_orderkey", 8)} % 64 AS leaf,
+        |    ${duckMd5Bits("mv", "o_orderkey", 6)} AS va
+        |  FROM orders),
+        |kv AS (SELECT k, leaf, va, CASE WHEN k % 16 = 9 THEN va + 1 ELSE va END AS vb FROM ks),
+        |kh AS (SELECT leaf,
+        |    ${duckMd5Bits("'mh:' || CAST(k AS VARCHAR) || ':' || CAST(va AS VARCHAR)", 12)} % 1099511627776 AS ha,
+        |    ${duckMd5Bits("'mh:' || CAST(k AS VARCHAR) || ':' || CAST(vb AS VARCHAR)", 12)} % 1099511627776 AS hb
+        |  FROM kv),
+        |leaves AS (SELECT leaf, CAST(SUM(ha) % 1099511627776 AS BIGINT) AS da,
+        |    CAST(SUM(hb) % 1099511627776 AS BIGINT) AS db,
+        |    CAST(COUNT(*) AS BIGINT) AS n_keys FROM kh GROUP BY 1),
+        |nodes AS (
+        |  SELECT CAST(l.range AS INT) AS level, leaf // (1 << CAST(l.range AS INT)) AS node,
+        |    CAST(SUM(da) % 1099511627776 AS BIGINT) AS da,
+        |    CAST(SUM(db) % 1099511627776 AS BIGINT) AS db
+        |  FROM leaves CROSS JOIN range(0, 7) l GROUP BY 1, 2),
+        |lvlstats AS (
+        |  SELECT level, CAST(COUNT(*) AS BIGINT) AS n_nodes,
+        |    CAST(SUM(CASE WHEN da <> db THEN 1 ELSE 0 END) AS BIGINT) AS n_differing,
+        |    CAST(NULL AS BIGINT) AS n_keys_transferred,
+        |    CAST(NULL AS BIGINT) AS n_keys_total
+        |  FROM nodes GROUP BY 1)
+        |SELECT * FROM (
+        |  SELECT * FROM lvlstats
+        |  UNION ALL
+        |  SELECT 99 AS level, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
+        |    CAST(SUM(CASE WHEN da <> db THEN n_keys ELSE 0 END) AS BIGINT),
+        |    CAST(SUM(n_keys) AS BIGINT)
+        |  FROM leaves
+        |) ORDER BY level""".stripMargin),
 
     // State-based CRDT counter (G-counter pair = PN-counter) — the
     // coordination-free aggregate a multi-region service merges: three
@@ -826,7 +1288,7 @@ object Round15Ops extends Family {
     // key while every single view undercounts — eventual consistency
     // graded exactly. Per key: the three local values, merged, truth,
     // convergence flag. Two rollups, linear.
-    "agg_crdt_counter" -> ((s, d) => {
+    Op("agg_crdt_counter", (s, d) => {
       val ev = Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 7).as("key"))
         .withColumn("node", (col("event_id") % 3).cast("int"))
@@ -853,7 +1315,34 @@ object Round15Ops extends Family {
           sum(expr("tp - tn")).as("true_value"))
         .withColumn("converged", col("merged_value") === col("true_value"))
         .orderBy("key")
-    }),
+    },
+      s"""WITH ev AS (
+        |  SELECT user_id % 7 AS key, CAST(event_id % 3 AS INT) AS node,
+        |    ${duckMd5Bits("pn", "event_id", 6)} % 4 <> 0 AS isp,
+        |    (event_id % 3 = 0) OR (${duckMd5Bits("sv0", "event_id", 6)} % 10 < 7) AS s0,
+        |    (event_id % 3 = 1) OR (${duckMd5Bits("sv1", "event_id", 6)} % 10 < 7) AS s1,
+        |    (event_id % 3 = 2) OR (${duckMd5Bits("sv2", "event_id", 6)} % 10 < 7) AS s2
+        |  FROM events),
+        |pn AS (
+        |  SELECT key, node,
+        |    CAST(SUM(CASE WHEN isp THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+        |    CAST(SUM(CASE WHEN NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS tn,
+        |    CAST(SUM(CASE WHEN s0 AND isp THEN 1 ELSE 0 END) AS BIGINT) AS p0,
+        |    CAST(SUM(CASE WHEN s0 AND NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS n0,
+        |    CAST(SUM(CASE WHEN s1 AND isp THEN 1 ELSE 0 END) AS BIGINT) AS p1,
+        |    CAST(SUM(CASE WHEN s1 AND NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(SUM(CASE WHEN s2 AND isp THEN 1 ELSE 0 END) AS BIGINT) AS p2,
+        |    CAST(SUM(CASE WHEN s2 AND NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS n2
+        |  FROM ev GROUP BY 1, 2)
+        |SELECT key,
+        |  CAST(SUM(p0 - n0) AS BIGINT) AS view0_value,
+        |  CAST(SUM(p1 - n1) AS BIGINT) AS view1_value,
+        |  CAST(SUM(p2 - n2) AS BIGINT) AS view2_value,
+        |  CAST(SUM(greatest(p0, p1, p2) - greatest(n0, n1, n2)) AS BIGINT) AS merged_value,
+        |  CAST(SUM(tp - tn) AS BIGINT) AS true_value,
+        |  CAST(SUM(greatest(p0, p1, p2) - greatest(n0, n1, n2)) AS BIGINT)
+        |    = CAST(SUM(tp - tn) AS BIGINT) AS converged
+        |FROM pn GROUP BY 1 ORDER BY key""".stripMargin),
 
     // Reward-hacking audit (length bias) — the RLHF data-quality screen
     // beside llm_best_of_n_select (which picks winners; this audits the
@@ -864,7 +1353,7 @@ object Round15Ops extends Family {
     // Variant 2 plants reward = 200 + 2·len (the length-gamed model a
     // verbosity-biased judge produces); organic variants draw reward
     // independently, so only variant 2 may flag. One rollup.
-    "llm_reward_hacking_audit" -> ((s, d) => {
+    Op("llm_reward_hacking_audit", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("variant", (col("k") % 4).cast("int"))
@@ -890,7 +1379,27 @@ object Round15Ops extends Family {
         .select(col("variant"), col("n_pairs"),
           col("cov_num").cast("long").as("cov_num"), col("length_gamed"))
         .orderBy("variant")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_orderkey % 4 AS INT) AS variant,
+        |    ${duckMd5Bits("cl", "o_orderkey", 6)} % 400 + 100 AS len
+        |  FROM orders),
+        |r AS (SELECT variant, len,
+        |    CASE WHEN variant = 2 THEN 200 + len * 2
+        |      ELSE ${duckMd5Bits("rw", "k", 6)} % 1000 END AS reward_milli
+        |  FROM t),
+        |m AS (
+        |  SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        |    CAST(COUNT(*) AS HUGEINT) * SUM(len * reward_milli)
+        |      - CAST(SUM(len) AS HUGEINT) * SUM(reward_milli) AS cov_num,
+        |    CAST(COUNT(*) AS HUGEINT) * SUM(len * len)
+        |      - CAST(SUM(len) AS HUGEINT) * SUM(len) AS var_l,
+        |    CAST(COUNT(*) AS HUGEINT) * SUM(reward_milli * reward_milli)
+        |      - CAST(SUM(reward_milli) AS HUGEINT) * SUM(reward_milli) AS var_r
+        |  FROM r GROUP BY 1)
+        |SELECT variant, n_pairs, CAST(cov_num AS BIGINT) AS cov_num,
+        |  cov_num > 0 AND cov_num * cov_num * 4 > var_l * var_r AS length_gamed
+        |FROM m ORDER BY variant""".stripMargin),
 
     // Context-chunk dedup — the KV-cache sharing audit of a RAG serving
     // batch: each query retrieves 12 chunks, the first 4 slots from a
@@ -900,7 +1409,7 @@ object Round15Ops extends Family {
     // graded quantity is Σ(refs − 1)·chunk_tokens — the recompute the
     // dedup saves. Per query cohort: retrievals, distinct chunks, dup
     // ppm, saved-token mass. Two rollups, linear.
-    "llm_context_dedup" -> ((s, d) => {
+    Op("llm_context_dedup", (s, d) => {
       val ret = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("q"))
         .withColumn("slot", explode(expr("sequence(0, 11)")))
@@ -920,7 +1429,25 @@ object Round15Ops extends Family {
         .withColumn("dup_ppm", expr(
           "((n_retrievals - n_distinct_chunks) * 1000000) DIV n_retrievals"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH ret AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS q,
+        |    CASE WHEN j.range < 4
+        |      THEN ${duckMd5Bits("'rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)} % 50
+        |      ELSE 50 + ${duckMd5Bits("'rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)} % 100000
+        |    END AS chunk
+        |  FROM orders CROSS JOIN range(0, 12) j),
+        |pc AS (
+        |  SELECT CAST(q % 4 AS INT) AS cohort, chunk, CAST(COUNT(*) AS BIGINT) AS refs
+        |  FROM ret GROUP BY 1, 2),
+        |pt AS (SELECT cohort, refs,
+        |    ${duckMd5Bits("ct", "chunk", 6)} % 200 + 50 AS tok
+        |  FROM pc)
+        |SELECT cohort, CAST(SUM(refs) AS BIGINT) AS n_retrievals,
+        |  CAST(COUNT(*) AS BIGINT) AS n_distinct_chunks,
+        |  CAST(SUM((refs - 1) * tok) AS BIGINT) AS saved_token_mass,
+        |  CAST(((SUM(refs) - COUNT(*)) * 1000000) // SUM(refs) AS BIGINT) AS dup_ppm
+        |FROM pt GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Synthetic-data mix gate — the model-collapse guard a 2026 corpus
     // needs before training: md5 synthetic tagging at a 30% base rate
@@ -928,7 +1455,7 @@ object Round15Ops extends Family {
     // the exact synthetic share in ppm and the ≤50% cap verdict, split
     // over doc and token mass (a few long synthetic docs can breach the
     // TOKEN cap while the doc cap holds — both graded). One rollup.
-    "llm_synthetic_mix_gate" -> ((s, d) => {
+    Op("llm_synthetic_mix_gate", (s, d) => {
       Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("tok"))
@@ -945,7 +1472,20 @@ object Round15Ops extends Family {
           expr("(synth_token_mass * 1000000) DIV token_mass"))
         .withColumn("cap_breached", col("synth_token_ppm") > 500000L)
         .orderBy("source")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT source, CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
+        |    ${duckMd5Bits("sy", "doc_id", 6)} % 100
+        |      < CASE WHEN source = 'src2' THEN 80 ELSE 30 END AS synth
+        |  FROM documents)
+        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(CASE WHEN synth THEN 1 ELSE 0 END) AS BIGINT) AS n_synth,
+        |  CAST(SUM(tok) AS BIGINT) AS token_mass,
+        |  CAST(SUM(CASE WHEN synth THEN tok ELSE 0 END) AS BIGINT) AS synth_token_mass,
+        |  CAST((SUM(CASE WHEN synth THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS synth_doc_ppm,
+        |  CAST((SUM(CASE WHEN synth THEN tok ELSE 0 END) * 1000000) // SUM(tok) AS BIGINT) AS synth_token_ppm,
+        |  CAST((SUM(CASE WHEN synth THEN tok ELSE 0 END) * 1000000) // SUM(tok) AS BIGINT) > 500000 AS cap_breached
+        |FROM t GROUP BY 1 ORDER BY source""".stripMargin),
 
     // Keyboard-adjacency typo model — the fat-finger prior an ER scorer
     // should charge less for (an 'n'→'m' slip is evidence FOR a match;
@@ -957,7 +1497,7 @@ object Round15Ops extends Family {
     // graded census recovers the planted 85/15 split per cohort — the
     // empirical fat-finger rate the matcher weight is calibrated from.
     // Projection + broadcast join + rollup, linear.
-    "fn_keyboard_typo_model" -> ((s, d) => {
+    Op("fn_keyboard_typo_model", (s, d) => {
       val pool = array(lit("SMITH"), lit("SMYTH"), lit("SCHMIDT"),
         lit("JOHNSON"), lit("JONSON"), lit("MEYER"), lit("MAYER"),
         lit("BROWN"), lit("BRAUN"), lit("TAYLOR"), lit("WALKER"),
@@ -1008,7 +1548,33 @@ object Round15Ops extends Family {
         .withColumn("adjacent_ppm",
           expr("(n_adjacent * 1000000) DIV NULLIF(n_typos, 0)"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH adj(orig, adjc) AS (VALUES
+        |  ('M','N'), ('M','K'), ('C','X'), ('C','V'), ('O','I'), ('O','P'),
+        |  ('E','W'), ('E','R'), ('A','S'), ('A','Q'), ('R','E'), ('R','T')),
+        |fa AS (SELECT orig, MIN(adjc) AS a0, MAX(adjc) AS a1 FROM adj GROUP BY 1),
+        |t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    ['SMITH','SMYTH','SCHMIDT','JOHNSON','JONSON','MEYER','MAYER',
+        |     'BROWN','BRAUN','TAYLOR','WALKER','HARRIS'][CAST(c_custkey % 12 AS INT) + 1] AS name0
+        |  FROM customer),
+        |o AS (
+        |  SELECT k, substring(name0, 2, 1) AS c2, k % 7 = 3 AS typo,
+        |    CASE WHEN k % 7 <> 3 THEN substring(name0, 2, 1)
+        |      WHEN ${duckMd5Bits("kb", "k", 6)} % 100 < 85
+        |        THEN CASE WHEN ${duckMd5Bits("ka", "k", 6)} % 2 = 0
+        |          THEN fa.a0 ELSE fa.a1 END
+        |      ELSE 'q' END AS oc
+        |  FROM t JOIN fa ON fa.orig = substring(t.name0, 2, 1)),
+        |c AS (
+        |  SELECT o.k, o.typo, a.adjc IS NOT NULL AS is_adjacent
+        |  FROM o LEFT JOIN adj a ON a.orig = o.c2 AND a.adjc = o.oc)
+        |SELECT k % 4 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_records,
+        |  CAST(SUM(CASE WHEN typo THEN 1 ELSE 0 END) AS BIGINT) AS n_typos,
+        |  CAST(SUM(CASE WHEN typo AND is_adjacent THEN 1 ELSE 0 END) AS BIGINT) AS n_adjacent,
+        |  CAST((SUM(CASE WHEN typo AND is_adjacent THEN 1 ELSE 0 END) * 1000000)
+        |    // NULLIF(SUM(CASE WHEN typo THEN 1 ELSE 0 END), 0) AS BIGINT) AS adjacent_ppm
+        |FROM c GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // OCR confusion repair — the scanned-document cleanup a KYC intake
     // runs (0↔O, 1↔I, 5↔S, 8↔B are THE glyph confusions): document ids
@@ -1018,7 +1584,7 @@ object Round15Ops extends Family {
     // corruption class: documents, corrupted, repaired-to-exact — the
     // recovery census proving the translate table is total over the
     // planted confusions. Linear projection + rollup.
-    "fn_ocr_confusion" -> ((s, d) => {
+    Op("fn_ocr_confusion", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("ref", concat(lit("REF"), lpad((col("k") % 1000000).cast("string"), 6, "0")))
@@ -1037,7 +1603,27 @@ object Round15Ops extends Family {
           sum(when(col("seen") =!= col("ref"), 1L).otherwise(0L)).as("n_visibly_corrupted"),
           sum(when(col("repaired") === col("ref"), 1L).otherwise(0L)).as("n_repaired_exact"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    'REF' || lpad(CAST(o_orderkey % 1000000 AS VARCHAR), 6, '0') AS ref,
+        |    o_orderkey % 6 = 2 AS corrupt,
+        |    ${duckMd5Bits("oc", "o_orderkey", 6)} % 4 AS cls
+        |  FROM orders),
+        |o AS (
+        |  SELECT k, ref, corrupt, cls,
+        |    CASE WHEN NOT corrupt THEN ref
+        |      WHEN cls = 0 THEN translate(ref, '0', 'O')
+        |      WHEN cls = 1 THEN translate(ref, '1', 'I')
+        |      WHEN cls = 2 THEN translate(ref, '5', 'S')
+        |      ELSE translate(ref, '8', 'B') END AS seen
+        |  FROM t),
+        |r AS (SELECT *, translate(seen, 'OISB', '0158') AS repaired FROM o)
+        |SELECT CASE WHEN corrupt THEN cls ELSE -1 END AS cls,
+        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(CASE WHEN seen <> ref THEN 1 ELSE 0 END) AS BIGINT) AS n_visibly_corrupted,
+        |  CAST(SUM(CASE WHEN repaired = ref THEN 1 ELSE 0 END) AS BIGINT) AS n_repaired_exact
+        |FROM r GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Flesch reading-ease scoring — the readability leg of the quality-
     // classifier family (llm_quality_classifier scores stopwords/length;
@@ -1048,7 +1634,7 @@ object Round15Ops extends Family {
     // − (84600·Y) DIV W. Per language: corpus mass of each component,
     // the SIGNED score mass (sums only — no signed division), and the
     // easy-band (≥ 60) census. One projection + rollup, linear.
-    "agg_flesch_reading" -> ((s, d) => {
+    Op("agg_flesch_reading", (s, d) => {
       val t = Tables.documents(s, d)
         .select(col("lang"),
           size(split(col("text"), " ")).cast("bigint").as("w"),
@@ -1063,7 +1649,23 @@ object Round15Ops extends Family {
           sum("y").as("syllable_mass"), sum("score_milli").as("score_mass_milli"),
           sum(when(col("score_milli") >= 60000L, 1L).otherwise(0L)).as("n_easy"))
         .orderBy("lang")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS w,
+        |    CAST(len(regexp_extract_all(text, '[.!?]')) + 1 AS BIGINT) AS st,
+        |    greatest(CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT), 1) AS y
+        |  FROM documents),
+        |sc AS (
+        |  SELECT lang, w, st, y,
+        |    206835 - (1015 * w) // st - (84600 * y) // w AS score_milli
+        |  FROM t)
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(w) AS BIGINT) AS word_mass,
+        |  CAST(SUM(st) AS BIGINT) AS sentence_mass,
+        |  CAST(SUM(y) AS BIGINT) AS syllable_mass,
+        |  CAST(SUM(score_milli) AS BIGINT) AS score_mass_milli,
+        |  CAST(SUM(CASE WHEN score_milli >= 60000 THEN 1 ELSE 0 END) AS BIGINT) AS n_easy
+        |FROM sc GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // One synchronous Louvain pass — modularity-based community
     // detection over the weighted trade backbone (the label-propagation
@@ -1075,7 +1677,7 @@ object Round15Ops extends Family {
     // The data-scaled work is the one shared trade-edge build; the pass
     // itself runs on the bounded 25-nation backbone. Graded per adopted
     // community: members, internal edge weight, gain mass.
-    "graph_louvain_pass" -> ((s, d) => {
+    Op("graph_louvain_pass", (s, d) => {
       val hw = GraphOps.heavyBackboneW(s, d) // (a, b, w) undirected
       val deg = hw.select(col("a").as("n"), col("w"))
         .unionByName(hw.select(col("b").as("n"), col("w")))
@@ -1109,6 +1711,32 @@ object Round15Ops extends Family {
         .join(internal, Seq("comm"), "left")
         .withColumn("internal_w", coalesce(col("internal_w"), lit(0L)))
         .orderBy("comm")
+    },
+      {
+      s"""WITH ${GraphOps.louvainOracleCtes},
+         |deg AS (SELECT n, CAST(SUM(w) AS BIGINT) AS k FROM (
+         |  SELECT a AS n, w FROM hw UNION ALL SELECT b AS n, w FROM hw) q GROUP BY 1),
+         |m2 AS (SELECT CAST(SUM(k) AS BIGINT) AS m2 FROM deg),
+         |dirx AS (SELECT a AS i, b AS j, w FROM hw UNION ALL SELECT b AS i, a AS j, w FROM hw),
+         |ad AS (
+         |  SELECT i, CASE WHEN gain2m > 0 THEN j ELSE i END AS comm,
+         |    CASE WHEN gain2m > 0 THEN gain2m ELSE 0 END AS gain
+         |  FROM (
+         |    SELECT d.i, d.j, m2.m2 * d.w - ki.k * kj.k AS gain2m,
+         |      ROW_NUMBER() OVER (PARTITION BY d.i
+         |        ORDER BY m2.m2 * d.w - ki.k * kj.k DESC, d.j) AS rn
+         |    FROM dirx d JOIN deg ki ON ki.n = d.i JOIN deg kj ON kj.n = d.j
+         |    CROSS JOIN m2) q
+         |  WHERE rn = 1),
+         |internal AS (
+         |  SELECT ma.comm AS comm, CAST(SUM(hw.w) AS BIGINT) AS internal_w
+         |  FROM hw JOIN ad ma ON ma.i = hw.a JOIN ad mb ON mb.i = hw.b
+         |  WHERE ma.comm = mb.comm GROUP BY 1)
+         |SELECT ad.comm, CAST(COUNT(*) AS BIGINT) AS n_members,
+         |  CAST(SUM(ad.gain) AS BIGINT) AS gain_mass,
+         |  CAST(coalesce(MAX(i2.internal_w), 0) AS BIGINT) AS internal_w
+         |FROM ad LEFT JOIN internal i2 ON i2.comm = ad.comm
+         |GROUP BY 1 ORDER BY ad.comm""".stripMargin
     }),
 
     // Grid-DBSCAN over a 1-d exact-cents axis — density clustering with
@@ -1121,7 +1749,7 @@ object Round15Ops extends Family {
     // iteration), border buckets attach to their nearest island, the
     // rest is noise. Graded per cluster: core/border points, bucket
     // span; plus the noise row. Bucket rollup + one ≤250-row window.
-    "agg_dbscan_grid" -> ((s, d) => {
+    Op("agg_dbscan_grid", (s, d) => {
       val pts = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("dense", expr(
@@ -1167,7 +1795,47 @@ object Round15Ops extends Family {
         .select(lit(-1L).as("cluster"), lit(0L).as("n_core_points"),
           col("n_border_points"), col("n_buckets"))
       clusters.unionByName(noise).orderBy("cluster")
-    }),
+    },
+      s"""WITH pts AS (
+        |  SELECT CASE WHEN ${duckMd5Bits("db", "o_orderkey", 6)} % 10 < 7
+        |    THEN 10000 + (${duckMd5Bits("dc", "o_orderkey", 6)} % 3) * 40000
+        |       + ${duckMd5Bits("dx", "o_orderkey", 6)} % 501
+        |    ELSE ${duckMd5Bits("du", "o_orderkey", 6)} % 100000
+        |  END AS x
+        |  FROM orders),
+        |b0 AS (SELECT x // 400 AS b FROM pts),
+        |nt AS (SELECT GREATEST(1, COUNT(*) // 100) AS minpts FROM b0),
+        |bc AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cnt FROM b0 GROUP BY 1),
+        |nb AS (
+        |  SELECT c.b, c.cnt,
+        |    c.cnt + coalesce(l.cnt, 0) + coalesce(r.cnt, 0) AS hood
+        |  FROM bc c LEFT JOIN bc l ON l.b = c.b - 1 LEFT JOIN bc r ON r.b = c.b + 1),
+        |nc AS (SELECT nb.*, hood >= (SELECT minpts FROM nt) AS core FROM nb),
+        |isl AS (
+        |  SELECT b, cnt, b - ROW_NUMBER() OVER (ORDER BY b) AS grp
+        |  FROM nc WHERE core),
+        |coreb AS (SELECT b, cnt, MIN(b) OVER (PARTITION BY grp) AS cluster FROM isl),
+        |bord AS (
+        |  SELECT n.b, n.cnt, LEAST(cu.cluster, cd.cluster) AS cluster
+        |  FROM nc n LEFT JOIN coreb cu ON cu.b = n.b - 1
+        |  LEFT JOIN coreb cd ON cd.b = n.b + 1
+        |  WHERE NOT n.core),
+        |cl AS (
+        |  SELECT cluster, CAST(SUM(cnt) AS BIGINT) AS n_core_points,
+        |    CAST(COUNT(*) AS BIGINT) AS n_buckets
+        |  FROM coreb GROUP BY 1),
+        |bd AS (SELECT cluster, CAST(SUM(cnt) AS BIGINT) AS n_border_points
+        |  FROM bord WHERE cluster IS NOT NULL GROUP BY 1),
+        |nz AS (SELECT CAST(coalesce(SUM(cnt), 0) AS BIGINT) AS n_border_points,
+        |    CAST(COUNT(*) AS BIGINT) AS n_buckets FROM bord WHERE cluster IS NULL)
+        |SELECT * FROM (
+        |  SELECT cl.cluster, cl.n_core_points,
+        |    CAST(coalesce(bd.n_border_points, 0) AS BIGINT) AS n_border_points,
+        |    cl.n_buckets
+        |  FROM cl LEFT JOIN bd ON bd.cluster = cl.cluster
+        |  UNION ALL
+        |  SELECT CAST(-1 AS BIGINT), CAST(0 AS BIGINT), n_border_points, n_buckets FROM nz
+        |) ORDER BY cluster""".stripMargin),
 
     // IBAN mod-97 validation — the checksum gate a payments intake runs
     // (ISO 13616: move the country+check prefix to the tail, digitize,
@@ -1179,7 +1847,7 @@ object Round15Ops extends Family {
     // EVERY single-digit substitution, so the invalid census must equal
     // the planted corruption census exactly (asserted in the spec). One
     // projection + rollup, linear.
-    "fn_iban_mod97" -> ((s, d) => {
+    Op("fn_iban_mod97", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("hi", (col("k") * 7919L + 13L) % 1000000000L)
@@ -1201,7 +1869,27 @@ object Round15Ops extends Family {
           sum(when(!col("valid"), 1L).otherwise(0L)).as("n_invalid"),
           sum(when(col("corrupted"), 1L).otherwise(0L)).as("n_corrupted"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    (CAST(c_custkey AS BIGINT) * 7919 + 13) % 1000000000 AS hi,
+        |    ${duckMd5Bits("ib", "c_custkey", 8)} % 1000000000 AS lo
+        |  FROM customer),
+        |c AS (
+        |  SELECT k, hi, lo, k % 9 = 4 AS corrupted,
+        |    98 - (((hi % 97) * 34 + lo) % 97 * 27 + 131400) % 97 AS chk
+        |  FROM t),
+        |v AS (
+        |  SELECT k, corrupted,
+        |    (((hi % 97) * 34 + CASE WHEN corrupted THEN
+        |        CASE WHEN lo % 10 < 9 THEN lo + 1 ELSE lo - 1 END
+        |      ELSE lo END) % 97 * 27 + 131400 + chk) % 97 = 1 AS valid
+        |  FROM c)
+        |SELECT k % 5 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_ibans,
+        |  CAST(SUM(CASE WHEN valid THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
+        |  CAST(SUM(CASE WHEN NOT valid THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
+        |  CAST(SUM(CASE WHEN corrupted THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
+        |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // WebDataset (tar-shard) ingest — THE multimodal training-data
     // layout (grouped member files per sample inside plain tar shards,
@@ -1213,7 +1901,7 @@ object Round15Ops extends Family {
     // to 10⁵ shards), samples regrouped BY KEY across member files.
     // Graded per label: samples, members (must be 2×), exact payload
     // byte conservation vs the relational source.
-    "source_webdataset_shard" -> ((s, d) => {
+    Op("source_webdataset_shard", (s, d) => {
       val dir = Scratch.staged("wds", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 5 === 0)
           .select(col("doc_id"), col("text"), col("lang")).collect()
@@ -1251,7 +1939,13 @@ object Round15Ops extends Family {
           sum("txt_bytes").as("txt_byte_mass"),
           min("key").as("first_key"))
         .orderBy("lang")
-    }),
+    },
+      // Sample grouping + payload byte conservation vs the relational slice.
+      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_samples,
+        |  CAST(COUNT(*) * 2 AS BIGINT) AS n_members,
+        |  CAST(SUM(strlen(text)) AS BIGINT) AS txt_byte_mass,
+        |  MIN('sample_' || lpad(CAST(doc_id AS VARCHAR), 8, '0')) AS first_key
+        |FROM documents WHERE doc_id % 5 = 0 GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // Zip-shard ingest — the other archive layout crawl dumps actually
     // ship in: the same document slice staged as 3 zip shards with
@@ -1260,7 +1954,7 @@ object Round15Ops extends Family {
     // lang recovered from the member PATH (the directory-as-metadata
     // convention). Graded per lang: members, exact payload byte
     // conservation — a truncated or double-read member breaks the mass.
-    "source_zip_shard" -> ((s, d) => {
+    Op("source_zip_shard", (s, d) => {
       val dir = Scratch.staged("zipshard", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 4 === 1)
           .select(col("doc_id"), col("text"), col("lang")).collect()
@@ -1295,7 +1989,10 @@ object Round15Ops extends Family {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_members"), sum("n_bytes").as("byte_mass"))
         .orderBy("lang")
-    }),
+    },
+      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_members,
+        |  CAST(SUM(strlen(text)) AS BIGINT) AS byte_mass
+        |FROM documents WHERE doc_id % 4 = 1 GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // Hadoop SequenceFile roundtrip — the K/V container format the
     // Hadoop-era lake still holds (Writable-encoded, splittable,
@@ -1305,7 +2002,7 @@ object Round15Ops extends Family {
     // per-status rollup must equal the relational source exactly (a
     // Writable re-use bug — the classic sequenceFile trap — duplicates
     // the last record and breaks the census).
-    "source_sequencefile_roundtrip" -> ((s, d) => {
+    Op("source_sequencefile_roundtrip", (s, d) => {
       val root = Scratch.staged("seqfile", d) { root =>
         val rows = Tables.orders(s, d).where(col("o_orderkey") % 13 === 0)
           .select(col("o_orderkey"),
@@ -1326,7 +2023,11 @@ object Round15Ops extends Family {
         .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"),
           min("okey").as("min_key"), max("okey").as("max_key"))
         .orderBy("status")
-    }),
+    },
+      """SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
+        |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
+        |FROM orders WHERE o_orderkey % 13 = 0 GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Shewhart control chart with Nelson rules 1 & 2 — the SPC screen a
     // data-quality monitor runs on any KPI stream: per machine 48
@@ -1338,7 +2039,7 @@ object Round15Ops extends Family {
     // +4σ jump at sample 30 (rule 1 must fire), class 5 a +1.2σ drift
     // at sample 20 (rule 2 fires where rule 1 stays silent — the whole
     // point of the run rule). Census per class. Windows + rollups.
-    "win_control_chart" -> ((s, d) => {
+    Op("win_control_chart", (s, d) => {
       val base = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
         .withColumn("i", explode(expr("sequence(0, 47)")))
@@ -1375,7 +2076,39 @@ object Round15Ops extends Family {
           sum(when(col("n_rule1") > 0, 1L).otherwise(0L)).as("machines_rule1"),
           sum(when(col("n_rule2") > 0, 1L).otherwise(0L)).as("machines_rule2"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH base AS (
+        |  SELECT CAST(s_suppkey AS BIGINT) AS m, CAST(i.range AS INT) AS i,
+        |    CAST(s_suppkey % 7 AS INT) AS cls,
+        |    500 + (${duckMd5Bits("'cc:' || CAST(s_suppkey AS VARCHAR) || ':' || CAST(i.range AS VARCHAR)", 6)} % 41) - 20
+        |      + CASE WHEN s_suppkey % 7 = 2 AND i.range >= 30 THEN 80 ELSE 0 END
+        |      + CASE WHEN s_suppkey % 7 = 5 AND i.range >= 20 THEN 14 ELSE 0 END AS x
+        |  FROM supplier CROSS JOIN range(0, 48) i),
+        |mr AS (SELECT m, i, cls, x,
+        |    abs(x - lag(x) OVER (PARTITION BY m ORDER BY i)) AS mr
+        |  FROM base),
+        |bl AS (SELECT m, CAST((SUM(x) * 1000) // 16 AS BIGINT) AS center_milli,
+        |    CAST((SUM(CASE WHEN i >= 1 THEN mr ELSE 0 END) * 1000) // 15 AS BIGINT) AS mrbar_milli
+        |  FROM mr WHERE i < 16 GROUP BY 1),
+        |mk AS (
+        |  SELECT b.m, b.cls, b.i,
+        |    b.i >= 16 AND abs(b.x * 1000 - bl.center_milli) * 1128 > bl.mrbar_milli * 3000 AS rule1,
+        |    CASE WHEN b.x * 1000 > bl.center_milli THEN 1 ELSE 0 END AS above
+        |  FROM base b JOIN bl ON bl.m = b.m),
+        |r2 AS (SELECT m, cls, i, rule1,
+        |    SUM(above) OVER (PARTITION BY m ORDER BY i
+        |      ROWS BETWEEN 8 PRECEDING AND CURRENT ROW) AS run9
+        |  FROM mk),
+        |pm AS (SELECT m, cls,
+        |    CAST(SUM(CASE WHEN rule1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rule1,
+        |    CAST(SUM(CASE WHEN i >= 24 AND (run9 = 9 OR run9 = 0) THEN 1 ELSE 0 END) AS BIGINT) AS n_rule2
+        |  FROM r2 GROUP BY 1, 2)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_machines,
+        |  CAST(SUM(n_rule1) AS BIGINT) AS rule1_mass,
+        |  CAST(SUM(n_rule2) AS BIGINT) AS rule2_mass,
+        |  CAST(SUM(CASE WHEN n_rule1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS machines_rule1,
+        |  CAST(SUM(CASE WHEN n_rule2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS machines_rule2
+        |FROM pm GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Honorific strip — the title/suffix cleanup fn_name_standardize's
     // family still lacked (a matcher that blocks 'DR JOHN SMITH JR'
@@ -1384,7 +2117,7 @@ object Round15Ops extends Family {
     // a canonical core, stripped by two anchored regexes; graded per
     // layout class: records, stripped == canonical recovery (must be
     // total), residual char mass. Linear projection + rollup.
-    "fn_honorific_strip" -> ((s, d) => {
+    Op("fn_honorific_strip", (s, d) => {
       val pre = array(lit("DR "), lit("MR "), lit("MS "), lit("PROF "))
       val suf = array(lit(" JR"), lit(" SR"), lit(" III"), lit(""))
       val t = Tables.customer(s, d)
@@ -1403,7 +2136,22 @@ object Round15Ops extends Family {
             .as("n_recovered"),
           sum(length(col("raw")) - length(col("stripped"))).as("chars_stripped"))
         .orderBy("p", "q")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    'PERSON ' || lpad(CAST(c_custkey % 997 AS VARCHAR), 4, '0') AS canon,
+        |    CAST(c_custkey % 4 AS INT) AS p, CAST((c_custkey // 4) % 4 AS INT) AS q
+        |  FROM customer),
+        |r AS (SELECT k, canon, p, q,
+        |    ['DR ','MR ','MS ','PROF '][p + 1] || canon || [' JR',' SR',' III',''][q + 1] AS raw
+        |  FROM t),
+        |x AS (SELECT p, q, canon, raw,
+        |    regexp_replace(regexp_replace(raw, '^(DR|MR|MS|PROF) ', ''), ' (JR|SR|III)$', '') AS stripped
+        |  FROM r)
+        |SELECT p, q, CAST(COUNT(*) AS BIGINT) AS n_records,
+        |  CAST(SUM(CASE WHEN stripped = canon THEN 1 ELSE 0 END) AS BIGINT) AS n_recovered,
+        |  CAST(SUM(len(raw) - len(stripped)) AS BIGINT) AS chars_stripped
+        |FROM x GROUP BY 1, 2 ORDER BY p, q""".stripMargin),
 
     // Deceased / gone-away suppression — the mailing-list hygiene join
     // every person service runs before contact (and a regulatory duty
@@ -1413,7 +2161,7 @@ object Round15Ops extends Family {
     // the mailable census graded per cohort with the overlap made
     // explicit: mailable = n − deceased − goneaway + both. Two broadcast
     // semi-join flags + one rollup, linear.
-    "warehouse_deceased_suppression" -> ((s, d) => {
+    Op("warehouse_deceased_suppression", (s, d) => {
       val persons = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
       val dec = persons.where(col("k") % 23 === 6).select(col("k").as("dk"))
@@ -1430,7 +2178,14 @@ object Round15Ops extends Family {
           sum(when(col("is_dec") && col("is_gone"), 1L).otherwise(0L)).as("n_both"),
           sum(when(!col("is_dec") && !col("is_gone"), 1L).otherwise(0L)).as("n_mailable"))
         .orderBy("cohort")
-    }),
+    },
+      """WITH p AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer)
+        |SELECT k % 4 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_persons,
+        |  CAST(SUM(CASE WHEN k % 23 = 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_deceased,
+        |  CAST(SUM(CASE WHEN k % 17 = 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_goneaway,
+        |  CAST(SUM(CASE WHEN k % 23 = 6 AND k % 17 = 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
+        |  CAST(SUM(CASE WHEN k % 23 <> 6 AND k % 17 <> 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_mailable
+        |FROM p GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Age-gate classification (COPPA / GDPR Art. 8) — the age-derived
     // consent regime every person service must route on: DOBs spread
@@ -1441,7 +2196,7 @@ object Round15Ops extends Family {
     // (16–17), adult (≥18). Graded per class: persons, consent-required
     // flag, age mass (the retention-schedule driver). One projection +
     // rollup, linear.
-    "fn_age_gate" -> ((s, d) => {
+    Op("fn_age_gate", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("by", lit(1950L) + col("k") % 76)
@@ -1459,7 +2214,23 @@ object Round15Ops extends Family {
           min("age").as("min_age"), max("age").as("max_age"))
         .withColumn("consent_required", col("cls") =!= "4_adult")
         .orderBy("cls")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    1950 + CAST(c_custkey AS BIGINT) % 76 AS by,
+        |    CAST(c_custkey AS BIGINT) % 12 + 1 AS bm,
+        |    CAST(c_custkey AS BIGINT) % 28 + 1 AS bd
+        |  FROM customer),
+        |a AS (SELECT (20260816 - (by * 10000 + bm * 100 + bd)) // 10000 AS age FROM t),
+        |c AS (SELECT age,
+        |    CASE WHEN age < 13 THEN '1_child' WHEN age < 16 THEN '2_consent_age'
+        |      WHEN age < 18 THEN '3_minor' ELSE '4_adult' END AS cls
+        |  FROM a)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_persons,
+        |  CAST(SUM(age) AS BIGINT) AS age_mass,
+        |  CAST(MIN(age) AS BIGINT) AS min_age, CAST(MAX(age) AS BIGINT) AS max_age,
+        |  cls <> '4_adult' AS consent_required
+        |FROM c GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // DOB day/month-transposition check — the US/EU date-format hazard
     // (03/04/1990 is April 3rd in one system and March 4th in the
@@ -1470,7 +2241,7 @@ object Round15Ops extends Family {
     // dangerous class). Graded per class: records, raw date agreement,
     // agreement AFTER the swap-back repair — divergent must go 0 → all.
     // One projection + rollup, linear.
-    "fn_dob_transpose_check" -> ((s, d) => {
+    Op("fn_dob_transpose_check", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("y", lit(1960L) + col("k") % 50)
@@ -1495,7 +2266,28 @@ object Round15Ops extends Family {
             || col("a_date") === col("b_date"), 1L).otherwise(0L))
             .as("n_match_after_swap"))
         .orderBy("cls")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    1960 + CAST(c_custkey AS BIGINT) % 50 AS y,
+        |    CAST(c_custkey AS BIGINT) % 12 + 1 AS m,
+        |    CAST(c_custkey AS BIGINT) % 28 + 1 AS dd
+        |  FROM customer),
+        |x AS (
+        |  SELECT y * 10000 + m * 100 + dd AS a_date,
+        |    CASE WHEN dd <= 12 THEN y * 10000 + dd * 100 + m
+        |      ELSE y * 10000 + m * 100 + dd END AS b_date,
+        |    CASE WHEN dd > 12 THEN 'unambiguous'
+        |      WHEN dd = m THEN 'ambiguous_consistent'
+        |      ELSE 'ambiguous_divergent' END AS cls
+        |  FROM t),
+        |r AS (SELECT cls, a_date, b_date,
+        |    (b_date // 10000) * 10000 + (b_date % 100) * 100 + (b_date % 10000) // 100 AS b_swapback
+        |  FROM x)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_records,
+        |  CAST(SUM(CASE WHEN a_date = b_date THEN 1 ELSE 0 END) AS BIGINT) AS n_match_raw,
+        |  CAST(SUM(CASE WHEN a_date = b_swapback OR a_date = b_date THEN 1 ELSE 0 END) AS BIGINT) AS n_match_after_swap
+        |FROM r GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Round-number bias census — the AML red flag beside
     // agg_txn_structuring (amounts engineered UNDER a threshold; this
@@ -1505,7 +2297,7 @@ object Round15Ops extends Family {
     // census and the $100-multiple ppm — at uniform the expected rate is
     // 100 ppm, so the planted cohort reads 3 orders of magnitude hot.
     // One projection + rollup, linear.
-    "agg_round_number_bias" -> ((s, d) => {
+    Op("agg_round_number_bias", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"),
           col("o_custkey").cast("bigint").as("acct"))
@@ -1523,7 +2315,23 @@ object Round15Ops extends Family {
           sum(when(col("cents") % 10000 === 0, 1L).otherwise(0L)).as("n_r10000"))
         .withColumn("r10000_ppm", expr("(n_r10000 * 1000000) DIV n_txns"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_custkey % 5 AS INT) AS cohort,
+        |    ${duckMd5Bits("rn", "o_orderkey", 8)} AS g
+        |  FROM orders),
+        |c AS (
+        |  SELECT cohort,
+        |    CASE WHEN cohort = 3 AND g % 10 < 4 THEN (g % 150 + 1) * 10000
+        |      ELSE g % 1500000 + 1 END AS cents
+        |  FROM t)
+        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_txns,
+        |  CAST(SUM(CASE WHEN cents % 100 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_r100,
+        |  CAST(SUM(CASE WHEN cents % 1000 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_r1000,
+        |  CAST(SUM(CASE WHEN cents % 10000 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_r10000,
+        |  CAST((SUM(CASE WHEN cents % 10000 = 0 THEN 1 ELSE 0 END) * 1000000)
+        |    // COUNT(*) AS BIGINT) AS r10000_ppm
+        |FROM c GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Chain-ladder development factors — the claims run-off triangle
     // every insurer (and every delayed-feedback pipeline, cf.
@@ -1536,7 +2344,7 @@ object Round15Ops extends Family {
     // factor via one floor division — no factor-product overflow).
     // Graded: per-lag factor masses + milli, per-accident latest and
     // projection. Two rollups + one broadcast factor join.
-    "agg_chain_ladder" -> ((s, d) => {
+    Op("agg_chain_ladder", (s, d) => {
       val pay = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("acc", (col("k") % 8).cast("int"))
@@ -1571,7 +2379,37 @@ object Round15Ops extends Family {
         .select(lit("factor").as("kind"), col("lag").cast("long").as("idx"),
           col("mass_j").as("v1"), col("mass_j1").as("v2"), col("factor_milli").as("v3"))
       perLag.unionByName(perAcc).orderBy("kind", "idx")
-    }),
+    },
+      s"""WITH pay AS (
+        |  SELECT CAST(o_orderkey % 8 AS INT) AS acc,
+        |    CAST(${duckMd5Bits("cd", "o_orderkey", 6)} % (8 - o_orderkey % 8) AS INT) AS lag,
+        |    ${duckMd5Bits("cp", "o_orderkey", 6)} % 100000 + 1000 AS cents
+        |  FROM orders),
+        |incr AS (SELECT acc, lag, CAST(SUM(cents) AS BIGINT) AS inc FROM pay GROUP BY 1, 2),
+        |cum AS (SELECT acc, lag,
+        |    CAST(SUM(inc) OVER (PARTITION BY acc ORDER BY lag) AS BIGINT) AS c
+        |  FROM incr),
+        |paired AS (
+        |  SELECT a.lag, a.c, b.c AS c_next
+        |  FROM cum a JOIN cum b ON b.acc = a.acc AND b.lag = a.lag + 1),
+        |factors AS (
+        |  SELECT lag, CAST(COUNT(*) AS BIGINT) AS n_cells,
+        |    CAST(SUM(c) AS BIGINT) AS mass_j, CAST(SUM(c_next) AS BIGINT) AS mass_j1
+        |  FROM paired GROUP BY 1),
+        |latest AS (
+        |  SELECT acc, lag AS latest_lag, c AS latest FROM (
+        |    SELECT acc, lag, c, ROW_NUMBER() OVER (PARTITION BY acc ORDER BY lag DESC) AS rn
+        |    FROM cum) q WHERE rn = 1)
+        |SELECT kind, idx, v1, v2, v3 FROM (
+        |  SELECT 'factor' AS kind, CAST(lag AS BIGINT) AS idx, mass_j AS v1, mass_j1 AS v2,
+        |    CAST((mass_j1 * 1000) // mass_j AS BIGINT) AS v3
+        |  FROM factors
+        |  UNION ALL
+        |  SELECT 'accident', CAST(l.acc AS BIGINT), l.latest,
+        |    CAST((CAST(l.latest AS HUGEINT) * f.mass_j1) // f.mass_j AS BIGINT),
+        |    CAST(NULL AS BIGINT)
+        |  FROM latest l LEFT JOIN factors f ON f.lag = l.latest_lag
+        |) ORDER BY kind, idx""".stripMargin),
 
     // Bonus-malus (no-claims-discount) ladder — the merit-rating state
     // machine motor insurance prices on: drivers start at level 5, each
@@ -1581,7 +2419,7 @@ object Round15Ops extends Family {
     // Cohort 2 plants a 40% claim rate vs the 20% base; premium =
     // 10 000 · level-multiplier (150/130/115/100/90/80 %) exact. Graded
     // per (cohort, final level): drivers, claim mass, premium mass.
-    "agg_bonus_malus" -> ((s, d) => {
+    Op("agg_bonus_malus", (s, d) => {
       var t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
@@ -1603,6 +2441,25 @@ object Round15Ops extends Family {
         .agg(count(lit(1)).as("n_drivers"), sum("n_claims").as("claim_mass"),
           sum("premium").as("premium_mass"))
         .orderBy("cohort", "lvl")
+    },
+      {
+      val steps = (1 to 6).map { yr =>
+        s"""y$yr AS (SELECT k, cohort,
+           |    CASE WHEN claim THEN GREATEST(lvl - 2, 0) ELSE LEAST(lvl + 1, 5) END AS lvl,
+           |    n_claims + CASE WHEN claim THEN 1 ELSE 0 END AS n_claims
+           |  FROM (SELECT y${yr - 1}.*,
+           |      ${duckMd5Bits(s"bm$yr", "k", 6)} % 100
+           |        < CASE WHEN cohort = 2 THEN 40 ELSE 20 END AS claim
+           |    FROM y${yr - 1}) q)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH y0 AS (SELECT CAST(c_custkey AS BIGINT) AS k,
+         |    CAST(c_custkey % 4 AS INT) AS cohort,
+         |    CAST(5 AS BIGINT) AS lvl, CAST(0 AS BIGINT) AS n_claims FROM customer),
+         |$steps
+         |SELECT cohort, lvl, CAST(COUNT(*) AS BIGINT) AS n_drivers,
+         |  CAST(SUM(n_claims) AS BIGINT) AS claim_mass,
+         |  CAST(SUM((10000 * [150, 130, 115, 100, 90, 80][CAST(lvl + 1 AS INT)]) // 100) AS BIGINT) AS premium_mass
+         |FROM y6 GROUP BY 1, 2 ORDER BY cohort, lvl""".stripMargin
     }),
 
     // Bühlmann credibility premium — the blended rate a class is charged
@@ -1614,7 +2471,7 @@ object Round15Ops extends Family {
     // between the collective mean and its individual mean — the
     // shrinkage the estimator exists for (asserted in the spec). Two
     // rollups + one broadcast scalar join.
-    "agg_credibility_buhlmann" -> ((s, d) => {
+    Op("agg_credibility_buhlmann", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 8).cast("int"))
@@ -1632,7 +2489,19 @@ object Round15Ops extends Family {
         .select("cls", "n_claims", "ind_mass", "coll_mean_milli",
           "z_ppm", "premium_milli")
         .orderBy("cls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey % 8 AS INT) AS cls,
+        |    (${duckMd5Bits("cb", "o_orderkey", 6)} % 50000 + 1000)
+        |      * CASE WHEN o_orderkey % 8 = 4 THEN 2 ELSE 1 END AS cents
+        |  FROM orders),
+        |coll AS (SELECT CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS coll_mean_milli FROM t),
+        |m AS (SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_claims,
+        |    CAST(SUM(cents) AS BIGINT) AS ind_mass FROM t GROUP BY 1)
+        |SELECT cls, n_claims, ind_mass, coll.coll_mean_milli,
+        |  CAST((n_claims * 1000000) // (n_claims + 40) AS BIGINT) AS z_ppm,
+        |  CAST((ind_mass * 1000 + 40 * coll_mean_milli) // (n_claims + 40) AS BIGINT) AS premium_milli
+        |FROM m CROSS JOIN coll ORDER BY cls""".stripMargin),
 
     // Loan amortization schedule — the exact-cents annuity unroll a
     // consumer-finance book reconciles on: 1%/month over 12 months, the
@@ -1642,7 +2511,7 @@ object Round15Ops extends Family {
     // and balance reduction — all floor cents, so the FINAL RESIDUAL is
     // the rounding drift a float schedule silently hides (graded
     // per cohort along with interest and scheduled-payment mass).
-    "agg_loan_amortization" -> ((s, d) => {
+    Op("agg_loan_amortization", (s, d) => {
       var t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
@@ -1665,6 +2534,30 @@ object Round15Ops extends Family {
           sum("bal").as("residual_mass"),
           max(abs(col("bal"))).as("max_residual"))
         .orderBy("cohort")
+    },
+      {
+      val months = (1 to 12).map { m =>
+        s"""m$m AS (SELECT k, cohort, p0, pay,
+           |    interest_total + bal // 100 AS interest_total,
+           |    bal + bal // 100 - pay AS bal
+           |  FROM m${m - 1})""".stripMargin
+      }.mkString(",\n")
+      s"""WITH m0 AS (
+         |  SELECT CAST(c_custkey AS BIGINT) AS k, CAST(c_custkey % 4 AS INT) AS cohort,
+         |    ${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000 AS p0,
+         |    ((${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000)
+         |      * 10000 * 1126822) // 126822000000 AS pay,
+         |    ${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000 AS bal,
+         |    CAST(0 AS BIGINT) AS interest_total
+         |  FROM customer),
+         |$months
+         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_loans,
+         |  CAST(SUM(p0) AS BIGINT) AS principal_mass,
+         |  CAST(SUM(pay * 12) AS BIGINT) AS scheduled_mass,
+         |  CAST(SUM(interest_total) AS BIGINT) AS interest_mass,
+         |  CAST(SUM(bal) AS BIGINT) AS residual_mass,
+         |  CAST(MAX(abs(bal)) AS BIGINT) AS max_residual
+         |FROM m12 GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // Macaulay bond duration — the interest-rate-risk number a treasury
@@ -1675,7 +2568,7 @@ object Round15Ops extends Family {
     // Coupon classes 2%..9% planted by key: higher coupons must shorten
     // the duration (more mass arrives early) — asserted in the spec.
     // One bounded explode + rollup.
-    "agg_bond_duration" -> ((s, d) => {
+    Op("agg_bond_duration", (s, d) => {
       val dfArr = "array(952380L, 907028L, 863836L, 822700L, 783523L, 746212L, 710678L, 676836L)"
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
@@ -1693,7 +2586,22 @@ object Round15Ops extends Family {
         .select(col("coupon_pct"), col("n_bonds"),
           col("pv_num").cast("long").as("pv_num"), col("duration_milli"))
         .orderBy("coupon_pct")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    CAST(c_custkey % 8 + 2 AS INT) AS coupon_pct,
+        |    CAST(s.range AS INT) AS t
+        |  FROM customer CROSS JOIN range(1, 9) s),
+        |c AS (
+        |  SELECT k, coupon_pct, t,
+        |    coupon_pct * 10000 + CASE WHEN t = 8 THEN 1000000 ELSE 0 END AS cf,
+        |    [952380, 907028, 863836, 822700, 783523, 746212, 710678, 676836][t] AS df
+        |  FROM t)
+        |SELECT coupon_pct, CAST(COUNT(DISTINCT k) AS BIGINT) AS n_bonds,
+        |  CAST(SUM(CAST(cf AS HUGEINT) * df) AS BIGINT) AS pv_num,
+        |  CAST((SUM(CAST(t AS HUGEINT) * cf * df) * 1000)
+        |    // SUM(CAST(cf AS HUGEINT) * df) AS BIGINT) AS duration_milli
+        |FROM c GROUP BY 1 ORDER BY coupon_pct""".stripMargin),
 
     // 12-step binomial (CRR-style) option valuation — the lattice kept
     // EXACT by rational node prices (S·11^k·9^(12−k) over 10¹², never a
@@ -1703,7 +2611,7 @@ object Round15Ops extends Family {
     // floor division at the very end. Moneyness classes plant strikes
     // from deep ITM to far OTM; the value must be monotone in strike
     // (asserted). One 13-way bounded explode + rollup per class.
-    "agg_binomial_option" -> ((s, d) => {
+    Op("agg_binomial_option", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("key"))
         .withColumn("cls", (col("key") % 5).cast("int"))
@@ -1723,7 +2631,24 @@ object Round15Ops extends Family {
                  | DIV (4096 * CAST(1000000000000 AS DECIMAL(38,0))) AS BIGINT)""".stripMargin)
             .as("value_mass_cents"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS key, CAST(o_orderkey % 5 AS INT) AS cls,
+        |    ${duckMd5Bits("op", "o_orderkey", 6)} % 5000 + 8000 AS spot
+        |  FROM orders),
+        |x AS (
+        |  SELECT key, cls, spot, spot + (cls - 2) * 2000 AS strike,
+        |    CAST(j.range AS INT) AS k,
+        |    [1, 12, 66, 220, 495, 792, 924, 792, 495, 220, 66, 12, 1][CAST(j.range AS INT) + 1] AS coef
+        |  FROM t CROSS JOIN range(0, 13) j),
+        |p AS (
+        |  SELECT cls, key, coef,
+        |    GREATEST(CAST(spot AS HUGEINT) * CAST(power(11, k) AS HUGEINT) * CAST(power(9, 12 - k) AS HUGEINT)
+        |      - CAST(strike AS HUGEINT) * 1000000000000, CAST(0 AS HUGEINT)) AS payoff_num
+        |  FROM x)
+        |SELECT cls, CAST(COUNT(DISTINCT key) AS BIGINT) AS n_options,
+        |  CAST(SUM(coef * payoff_num) // (4096 * CAST(1000000000000 AS HUGEINT)) AS BIGINT) AS value_mass_cents
+        |FROM p GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // PII scan — the redaction pre-pass every LLM training corpus runs
     // before tokenization: four planted PII classes appended to document
@@ -1733,7 +2658,7 @@ object Round15Ops extends Family {
     // hits per detector (the off-diagonal must stay 0 — an SSN detector
     // that fires on phone numbers over-redacts), and the redaction char
     // mass. One projection + rollup, linear.
-    "llm_pii_scan" -> ((s, d) => {
+    Op("llm_pii_scan", (s, d) => {
       val t = Tables.documents(s, d)
         .select(col("doc_id"), col("text"))
         .withColumn("cls", (col("doc_id") % 5).cast("int"))
@@ -1770,7 +2695,33 @@ object Round15Ops extends Family {
           sum("n_email").as("email_hits"), sum("n_phone").as("phone_hits"),
           sum(length(col("planted"))).as("redaction_char_mass"))
         .orderBy("cls")
-    }),
+    },
+      raw"""WITH t AS (
+        |  SELECT CAST(doc_id % 5 AS INT) AS cls, text,
+        |    ${duckMd5Bits("pii", "doc_id", 8)} AS g
+        |  FROM documents),
+        |p AS (
+        |  SELECT cls, text,
+        |    CASE WHEN cls = 1 THEN ' ssn ' || lpad(CAST(g % 900 + 100 AS VARCHAR), 3, '0')
+        |        || '-' || lpad(CAST(g % 90 + 10 AS VARCHAR), 2, '0')
+        |        || '-' || lpad(CAST(g % 9000 + 1000 AS VARCHAR), 4, '0')
+        |      WHEN cls = 2 THEN ' card 4' || lpad(CAST(g % 1000 AS VARCHAR), 3, '0')
+        |        || ' ' || lpad(CAST(g % 10000 AS VARCHAR), 4, '0')
+        |        || ' ' || lpad(CAST(g % 10000 AS VARCHAR), 4, '0')
+        |        || ' ' || lpad(CAST(g % 10000 AS VARCHAR), 4, '0')
+        |      WHEN cls = 3 THEN ' mail user' || CAST(g % 1000 AS VARCHAR) || '@example.com'
+        |      WHEN cls = 4 THEN ' call (555) ' || lpad(CAST(g % 900 + 100 AS VARCHAR), 3, '0')
+        |        || '-' || lpad(CAST(g % 9000 + 1000 AS VARCHAR), 4, '0')
+        |      ELSE '' END AS planted
+        |  FROM t),
+        |f AS (SELECT cls, planted, text || planted AS ftxt FROM p)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, '[0-9]{3}-[0-9]{2}-[0-9]{4}'))) AS BIGINT) AS ssn_hits,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, '4[0-9]{3} [0-9]{4} [0-9]{4} [0-9]{4}'))) AS BIGINT) AS pan_hits,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, '[a-z0-9]+@[a-z]+\.[a-z]+'))) AS BIGINT) AS email_hits,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, '\([0-9]{3}\) [0-9]{3}-[0-9]{4}'))) AS BIGINT) AS phone_hits,
+        |  CAST(SUM(len(planted)) AS BIGINT) AS redaction_char_mass
+        |FROM f GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Secret scan — the credential screen beside the PII pass (a leaked
     // key in training data is a breach, not just a privacy risk): three
@@ -1779,7 +2730,7 @@ object Round15Ops extends Family {
     // the 40-hex rule must NOT fire on (the false-positive guard an
     // entropy-only scanner fails). Graded per class: docs, per-detector
     // hits. One projection + rollup, linear.
-    "llm_secret_scan" -> ((s, d) => {
+    Op("llm_secret_scan", (s, d) => {
       val t = Tables.documents(s, d)
         .select(col("doc_id"), col("text"))
         .withColumn("cls", (col("doc_id") % 4).cast("int"))
@@ -1804,7 +2755,26 @@ object Round15Ops extends Family {
           sum("n_akia").as("akia_hits"), sum("n_ghp").as("ghp_hits"),
           sum("n_hex40").as("hex40_hits"))
         .orderBy("cls")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT CAST(doc_id % 4 AS INT) AS cls, text,
+        |    md5('sk:' || CAST(doc_id AS VARCHAR)) AS h,
+        |    md5('sk2:' || CAST(doc_id AS VARCHAR)) AS h2,
+        |    md5('sk3:' || CAST(doc_id AS VARCHAR)) AS h3
+        |  FROM documents),
+        |p AS (
+        |  SELECT cls, text,
+        |    CASE WHEN cls = 1 THEN ' AKIA' || upper(substring(regexp_replace(h, '[^a-z0-9]', '', 'g'), 1, 16))
+        |      WHEN cls = 2 THEN ' ghp_' || h || substring(h2, 1, 4)
+        |      WHEN cls = 3 THEN ' sha ' || h || substring(h3, 1, 8)
+        |      ELSE ' ref ' || substring(h, 1, 16) END AS planted
+        |  FROM t),
+        |f AS (SELECT cls, text || planted AS ftxt FROM p)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, 'AKIA[A-Z0-9]{16}'))) AS BIGINT) AS akia_hits,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, 'ghp_[A-Za-z0-9]{36}'))) AS BIGINT) AS ghp_hits,
+        |  CAST(SUM(len(regexp_extract_all(ftxt, '[0-9a-f]{40}'))) AS BIGINT) AS hex40_hits
+        |FROM f GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // PMI collocations — the pointwise-mutual-information ranking a
     // phrase miner runs over corpus bigrams: adjacent-token pairs, left/
@@ -1813,7 +2783,7 @@ object Round15Ops extends Family {
     // c_xy·N·10⁶ DIV (c_x·c_y) (> 10⁶ ⟺ positive PMI — the log is
     // monotone, so ranking needs no floats), support floor c_xy ≥ 5,
     // top-20 by (ratio DESC, pair). One token explode + three rollups.
-    "llm_pmi_collocations" -> ((s, d) => {
+    Op("llm_pmi_collocations", (s, d) => {
       val bg = Tables.documents(s, d)
         .select(split(col("text"), " ").as("t"))
         .where(size(col("t")) > 1)
@@ -1832,7 +2802,22 @@ object Round15Ops extends Family {
           s"CAST((CAST(c_xy AS DECIMAL(38,0)) * ${n}L * 1000000) DIV (CAST(c_x AS DECIMAL(38,0)) * c_y) AS BIGINT)"))
         .select(col("x"), col("y"), col("c_xy"), col("c_x"), col("c_y"), col("ratio_ppm"))
         .orderBy(desc("ratio_ppm"), col("x"), col("y")).limit(20)
-    }),
+    },
+      """WITH bg AS (
+        |  SELECT t[i] AS x, t[i + 1] AS y FROM (
+        |    SELECT string_split(text, ' ') AS t FROM documents) d,
+        |    LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i) s
+        |  WHERE len(t) > 1),
+        |nn AS (SELECT COUNT(*) AS n FROM bg),
+        |cx AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS c_x FROM bg GROUP BY 1),
+        |cy AS (SELECT y, CAST(COUNT(*) AS BIGINT) AS c_y FROM bg GROUP BY 1),
+        |cxy AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS c_xy FROM bg GROUP BY 1, 2)
+        |SELECT b.x, b.y, b.c_xy, cx.c_x, cy.c_y,
+        |  CAST((CAST(b.c_xy AS HUGEINT) * (SELECT n FROM nn) * 1000000)
+        |    // (CAST(cx.c_x AS HUGEINT) * cy.c_y) AS BIGINT) AS ratio_ppm
+        |FROM cxy b JOIN cx ON cx.x = b.x JOIN cy ON cy.y = b.y
+        |WHERE b.c_xy >= 5
+        |ORDER BY ratio_ppm DESC, b.x, b.y LIMIT 20""".stripMargin),
 
     // Double-entry trial balance — the closing control every ledger runs:
     // each business event posts a debit AND a credit line of the same
@@ -1841,7 +2826,7 @@ object Round15Ops extends Family {
     // catch. Per period: debit/credit mass, the exact imbalance (must
     // equal the planted single-sided cents), and the broken-posting
     // census by a per-event line-count rollup. Two rollups, linear.
-    "warehouse_trial_balance" -> ((s, d) => {
+    Op("warehouse_trial_balance", (s, d) => {
       val ev = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("period", (col("k") % 12).cast("int"))
@@ -1862,7 +2847,30 @@ object Round15Ops extends Family {
           sum(when(col("broken"), 1L).otherwise(0L)).as("n_broken"),
           sum(when(col("broken"), col("cents")).otherwise(0L)).as("broken_mass"))
       balance.join(brokenCnt, Seq("period")).orderBy("period")
-    }),
+    },
+      s"""WITH ev AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_orderkey % 12 AS INT) AS period,
+        |    ${duckMd5Bits("tb", "o_orderkey", 6)} % 500000 + 100 AS cents,
+        |    o_orderkey % 997 = 13 AS broken
+        |  FROM orders),
+        |ln AS (
+        |  SELECT period, cents, 'debit' AS side FROM ev
+        |  UNION ALL
+        |  SELECT period, cents, 'credit' FROM ev WHERE NOT broken),
+        |bal AS (
+        |  SELECT period,
+        |    CAST(SUM(CASE WHEN side = 'debit' THEN cents ELSE 0 END) AS BIGINT) AS debit_mass,
+        |    CAST(SUM(CASE WHEN side = 'credit' THEN cents ELSE 0 END) AS BIGINT) AS credit_mass
+        |  FROM ln GROUP BY 1),
+        |bc AS (
+        |  SELECT period, CAST(COUNT(*) AS BIGINT) AS n_events,
+        |    CAST(SUM(CASE WHEN broken THEN 1 ELSE 0 END) AS BIGINT) AS n_broken,
+        |    CAST(SUM(CASE WHEN broken THEN cents ELSE 0 END) AS BIGINT) AS broken_mass
+        |  FROM ev GROUP BY 1)
+        |SELECT bal.period, bal.debit_mass, bal.credit_mass,
+        |  bal.debit_mass - bal.credit_mass AS imbalance,
+        |  bc.n_events, bc.n_broken, bc.broken_mass
+        |FROM bal JOIN bc ON bc.period = bal.period ORDER BY bal.period""".stripMargin),
 
     // Accounts-receivable aging — the dunning report beside the ledger:
     // invoice ages md5 0–119 days with customer cohort 1 planted +30
@@ -1870,7 +2878,7 @@ object Round15Ops extends Family {
     // 1-30 / 31-60 / 61-90 / 90+ with the dunning escalation level per
     // bucket; per (cohort, bucket): invoices, exact cents exposure — the
     // working-capital number. One projection + rollup, linear.
-    "warehouse_ar_aging" -> ((s, d) => {
+    Op("warehouse_ar_aging", (s, d) => {
       Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"),
           col("o_custkey").cast("bigint").as("cust"))
@@ -1895,7 +2903,28 @@ object Round15Ops extends Family {
         .agg(count(lit(1)).as("n_invoices"), sum("cents").as("exposure_cents"),
           max("dunning_level").as("dunning_level"))
         .orderBy("cohort", "bucket")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_custkey % 4 AS INT) AS cohort,
+        |    ${duckMd5Bits("ar", "o_orderkey", 6)} % 120
+        |      + CASE WHEN o_custkey % 4 = 1 THEN 30 ELSE 0 END AS age_days,
+        |    ${duckMd5Bits("ai", "o_orderkey", 6)} % 800000 + 5000 AS cents
+        |  FROM orders),
+        |b AS (
+        |  SELECT cohort, cents,
+        |    CASE WHEN age_days = 0 THEN '0_current'
+        |      WHEN age_days <= 30 THEN '1_1to30'
+        |      WHEN age_days <= 60 THEN '2_31to60'
+        |      WHEN age_days <= 90 THEN '3_61to90'
+        |      ELSE '4_over90' END AS bucket,
+        |    CASE WHEN age_days <= 30 THEN 0
+        |      WHEN age_days <= 60 THEN 1
+        |      WHEN age_days <= 90 THEN 2 ELSE 3 END AS dunning_level
+        |  FROM t)
+        |SELECT cohort, bucket, CAST(COUNT(*) AS BIGINT) AS n_invoices,
+        |  CAST(SUM(cents) AS BIGINT) AS exposure_cents,
+        |  CAST(MAX(dunning_level) AS BIGINT) AS dunning_level
+        |FROM b GROUP BY 1, 2 ORDER BY cohort, bucket""".stripMargin),
 
     // Late-arriving fact census — the partition-layout decision every
     // event warehouse makes: facts carry an event sequence and an
@@ -1906,7 +2935,7 @@ object Round15Ops extends Family {
     // already-published aggregate. Per event bucket: facts, late,
     // restatements, restated cents mass — the reprocessing bill the
     // watermark choice controls. One projection + rollup, linear.
-    "warehouse_late_arriving_fact" -> ((s, d) => {
+    Op("warehouse_late_arriving_fact", (s, d) => {
       Tables.events(s, d)
         .select(col("event_id"))
         .withColumn("bucket", (col("event_id") % 8).cast("int"))
@@ -1923,7 +2952,19 @@ object Round15Ops extends Family {
             .as("restated_mass"))
         .withColumn("late_ppm", expr("(n_late * 1000000) DIV n_facts"))
         .orderBy("bucket")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(event_id % 8 AS INT) AS bucket,
+        |    ${duckMd5Bits("la", "event_id", 6)} % 21
+        |      + CASE WHEN event_id % 13 = 7 THEN 50 ELSE 0 END AS delay,
+        |    ${duckMd5Bits("lc", "event_id", 6)} % 10000 AS cents
+        |  FROM events)
+        |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_facts,
+        |  CAST(SUM(CASE WHEN delay > 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
+        |  CAST(SUM(CASE WHEN delay > 40 THEN 1 ELSE 0 END) AS BIGINT) AS n_restatements,
+        |  CAST(SUM(CASE WHEN delay > 40 THEN cents ELSE 0 END) AS BIGINT) AS restated_mass,
+        |  CAST((SUM(CASE WHEN delay > 10 THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS late_ppm
+        |FROM t GROUP BY 1 ORDER BY bucket""".stripMargin),
 
     // Erlang-B blocking probability — the trunk/capacity-sizing recursion
     // (B_n = aB_{n−1}/(n + aB_{n−1})) every call-center and connection-
@@ -1933,7 +2974,7 @@ object Round15Ops extends Family {
     // trunk groups, blocking mass, max blocking — the planted heavy band
     // (≥ 10 erlangs on 12 servers) must block an order of magnitude more
     // than the light one. One projection + rollup.
-    "agg_erlang_b" -> ((s, d) => {
+    Op("agg_erlang_b", (s, d) => {
       var t = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("g"))
         .withColumn("a_milli", expr(
@@ -1951,6 +2992,26 @@ object Round15Ops extends Family {
           sum("b").as("blocking_mass_ppm"), max("b").as("max_blocking_ppm"),
           min("b").as("min_blocking_ppm"))
         .orderBy("band")
+    },
+      {
+      val steps = (1 to 12).map { n =>
+        s"""e$n AS (SELECT g, a_milli,
+           |    (a_milli * b * 1000000) // (${n * 1000000000L} + a_milli * b) AS b
+           |  FROM e${n - 1})""".stripMargin
+      }.mkString(",\n")
+      s"""WITH e0 AS (
+         |  SELECT CAST(s_suppkey AS BIGINT) AS g,
+         |    ${duckMd5Bits("el", "s_suppkey", 6)} % 19000 + 1000 AS a_milli,
+         |    CAST(1000000 AS BIGINT) AS b
+         |  FROM supplier),
+         |$steps
+         |SELECT CASE WHEN a_milli < 5000 THEN '1_light'
+         |    WHEN a_milli < 10000 THEN '2_medium' ELSE '3_heavy' END AS band,
+         |  CAST(COUNT(*) AS BIGINT) AS n_groups,
+         |  CAST(SUM(b) AS BIGINT) AS blocking_mass_ppm,
+         |  CAST(MAX(b) AS BIGINT) AS max_blocking_ppm,
+         |  CAST(MIN(b) AS BIGINT) AS min_blocking_ppm
+         |FROM e12 GROUP BY 1 ORDER BY band""".stripMargin
     }),
 
     // Fill-rate / stockout census — the service-level number an
@@ -1960,7 +3021,7 @@ object Round15Ops extends Family {
     // — the distinction that matters when big orders stock out). Per
     // cohort: orders, stockouts, demanded/fulfilled unit mass, fill ppm.
     // One projection + rollup, linear.
-    "agg_fill_rate" -> ((s, d) => {
+    Op("agg_fill_rate", (s, d) => {
       Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
@@ -1979,7 +3040,20 @@ object Round15Ops extends Family {
         .withColumn("fill_ppm",
           expr("(fulfilled_units * 1000000) DIV demand_units"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey % 4 AS INT) AS cohort,
+        |    ${duckMd5Bits("fd", "o_orderkey", 6)} % 100 + 1 AS demand,
+        |    ${duckMd5Bits("fs", "o_orderkey", 6)} % 120
+        |      + CASE WHEN o_orderkey % 4 = 2 THEN 0 ELSE 40 END AS stock
+        |  FROM orders),
+        |f AS (SELECT cohort, demand, LEAST(demand, stock) AS fulfilled FROM t)
+        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(CASE WHEN fulfilled < demand THEN 1 ELSE 0 END) AS BIGINT) AS n_stockouts,
+        |  CAST(SUM(demand) AS BIGINT) AS demand_units,
+        |  CAST(SUM(fulfilled) AS BIGINT) AS fulfilled_units,
+        |  CAST((SUM(fulfilled) * 1000000) // SUM(demand) AS BIGINT) AS fill_ppm
+        |FROM f GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Laplace-smoothed CTR — the additive-(α=5) shrinkage every ranking
     // pipeline applies before sorting by rate (a 1-view/1-click item must
@@ -1988,7 +3062,7 @@ object Round15Ops extends Family {
     // cohort: items, zero-view items (raw undefined — smoothed lands at
     // the 100 000-ppm prior), raw-extreme items (0 or 10⁶) vs
     // smoothed-extreme (must be 0 — the whole point), smoothed mass.
-    "agg_laplace_ctr" -> ((s, d) => {
+    Op("agg_laplace_ctr", (s, d) => {
       Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 3).cast("int"))
@@ -2008,7 +3082,28 @@ object Round15Ops extends Family {
             .otherwise(0L)).as("n_smoothed_extreme"),
           sum("smoothed_ppm").as("smoothed_mass_ppm"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(p_partkey % 3 AS INT) AS cohort,
+        |    ${duckMd5Bits("lv", "p_partkey", 6)} % 100 AS views,
+        |    p_partkey AS k
+        |  FROM part),
+        |c AS (
+        |  SELECT cohort, views,
+        |    CASE WHEN views = 0 THEN 0
+        |      ELSE ${duckMd5Bits("lk", "k", 6)} % (views + 1) END AS clicks
+        |  FROM t),
+        |r AS (
+        |  SELECT cohort, views, clicks,
+        |    (clicks * 1000000) // NULLIF(views, 0) AS raw_ppm,
+        |    ((clicks + 5) * 1000000) // (views + 50) AS smoothed_ppm
+        |  FROM c)
+        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_items,
+        |  CAST(SUM(CASE WHEN views = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_view,
+        |  CAST(SUM(CASE WHEN raw_ppm = 0 OR raw_ppm = 1000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_raw_extreme,
+        |  CAST(SUM(CASE WHEN smoothed_ppm = 0 OR smoothed_ppm = 1000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_smoothed_extreme,
+        |  CAST(SUM(smoothed_ppm) AS BIGINT) AS smoothed_mass_ppm
+        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Term-frequency-adjusted Fellegi–Sunter — the Splink feature the
     // EM op (join_fs_em_weights) learns GLOBAL weights for, applied at
@@ -2024,7 +3119,7 @@ object Round15Ops extends Family {
     // that keeps hot-key pairs from going quadratic at corpus scale —
     // and censused. Graded per bucket: pairs, links, true matches, true
     // links. One frequency rollup + one blocked self-join + census.
-    "join_fs_tf_adjust" -> ((s, d) => {
+    Op("join_fs_tf_adjust", (s, d) => {
       def roster(drift: Boolean) = {
         val base = Tables.customer(s, d)
           .select(col("c_custkey").cast("bigint").as("k"),
@@ -2067,7 +3162,42 @@ object Round15Ops extends Family {
             .as("n_true_linked"))
         .unionByName(skipped)
         .orderBy("bucket")
-    }),
+    },
+      s"""WITH a AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS ak,
+        |    CASE WHEN c_custkey % 3 < 2
+        |      THEN 'S' || lpad(CAST(${duckMd5Bits("tf", "c_custkey // 3", 6)} % 200 AS VARCHAR), 3, '0')
+        |      ELSE 'R' || CAST(c_custkey AS VARCHAR) END AS surname,
+        |    CAST(c_nationkey AS BIGINT) AS acity
+        |  FROM customer),
+        |b AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS bk,
+        |    CASE WHEN c_custkey % 3 < 2
+        |      THEN 'S' || lpad(CAST(${duckMd5Bits("tf", "c_custkey // 3", 6)} % 200 AS VARCHAR), 3, '0')
+        |      ELSE 'R' || CAST(c_custkey AS VARCHAR) END AS surname,
+        |    CASE WHEN c_custkey % 15 = 2 THEN (CAST(c_nationkey AS BIGINT) + 1) % 25
+        |      ELSE CAST(c_nationkey AS BIGINT) END AS bcity
+        |  FROM customer),
+        |freq AS (SELECT surname, CAST(COUNT(*) AS BIGINT) AS f FROM a GROUP BY 1),
+        |pr AS (
+        |  SELECT CASE WHEN f = 1 THEN '1_unique'
+        |      WHEN f <= 20 THEN '2_uncommon' ELSE '3_common' END AS bucket,
+        |    (CASE WHEN f = 1 THEN 240 WHEN f <= 20 THEN 160 ELSE 80 END
+        |      + CASE WHEN acity = bcity THEN 80 ELSE -40 END) >= 200 AS lnk,
+        |    ak = bk AS tm
+        |  FROM a JOIN b USING (surname) JOIN freq USING (surname)
+        |  WHERE f <= 2000)
+        |SELECT bucket, n_pairs, n_links, n_true, n_true_linked FROM (
+        |  SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        |    CAST(SUM(CASE WHEN lnk THEN 1 ELSE 0 END) AS BIGINT) AS n_links,
+        |    CAST(SUM(CASE WHEN tm THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
+        |    CAST(SUM(CASE WHEN tm AND lnk THEN 1 ELSE 0 END) AS BIGINT) AS n_true_linked
+        |  FROM pr GROUP BY 1
+        |  UNION ALL
+        |  SELECT '4_oversize_skipped', CAST(coalesce(SUM(f * f), 0) AS BIGINT),
+        |    CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+        |  FROM freq WHERE f > 2000
+        |) ORDER BY bucket""".stripMargin),
 
     // ER split detection — the UNDER-linking audit dual to
     // join_identity_clusters' over-link census: each person has 3 system
@@ -2077,7 +3207,7 @@ object Round15Ops extends Family {
     // rounds (diameter ≤ 2), the per-person cluster-span census grades
     // the split rate — the recall-side ER quality number every steward
     // report pairs with the merge queue. Bounded join rounds, linear.
-    "join_er_split_detection" -> ((s, d) => {
+    Op("join_er_split_detection", (s, d) => {
       val p = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("p"))
       val recs = p.withColumn("sys", explode(expr("sequence(0, 2)")))
@@ -2109,6 +3239,29 @@ object Round15Ops extends Family {
         .agg(count(lit(1)).as("n_persons"),
           (count(lit(1)) * 3).as("n_records"))
         .orderBy("n_clusters")
+    },
+      {
+      val rounds = (1 to 3).map { r =>
+        s"""l$r AS (
+           |  SELECT x.rid, LEAST(x.l, coalesce(c.cand, x.l)) AS l, x.p
+           |  FROM l${r - 1} x LEFT JOIN (
+           |    SELECT e.b AS rid, MIN(y.l) AS cand
+           |    FROM edges e JOIN l${r - 1} y ON y.rid = e.a GROUP BY 1) c
+           |  ON c.rid = x.rid)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH pp AS (SELECT CAST(c_custkey AS BIGINT) AS p FROM customer),
+         |recs AS (SELECT p, p * 3 + s.range AS rid FROM pp CROSS JOIN range(0, 3) s),
+         |e01 AS (SELECT p * 3 AS a, p * 3 + 1 AS b FROM pp WHERE p % 7 <> 3 AND p % 11 <> 4),
+         |e12 AS (SELECT p * 3 + 1 AS a, p * 3 + 2 AS b FROM pp WHERE p % 11 <> 4),
+         |und AS (SELECT a, b FROM e01 UNION ALL SELECT a, b FROM e12),
+         |edges AS (SELECT a, b FROM und UNION ALL SELECT b AS a, a AS b FROM und),
+         |l0 AS (SELECT rid, rid AS l, p FROM recs),
+         |$rounds
+         |SELECT n_clusters, CAST(COUNT(*) AS BIGINT) AS n_persons,
+         |  CAST(COUNT(*) * 3 AS BIGINT) AS n_records
+         |FROM (SELECT p, CAST(COUNT(DISTINCT l) AS BIGINT) AS n_clusters
+         |      FROM l3 GROUP BY 1) q
+         |GROUP BY 1 ORDER BY n_clusters""".stripMargin
     }),
 
     // Customer lifetime value — 8 retention-decayed, discounted margin
@@ -2118,7 +3271,7 @@ object Round15Ops extends Family {
     // exact cents; CLV = Σ margin·surv_t·df_t DIV 10¹² cents. Cohort
     // retention is the planted lever: higher-retention cohorts must
     // grade strictly higher CLV per customer. 8 unrolled steps + rollup.
-    "agg_clv_discounted" -> ((s, d) => {
+    Op("agg_clv_discounted", (s, d) => {
       val dfLadder = Seq(952380L, 907028L, 863836L, 822700L, 783523L, 746212L, 710678L, 676836L)
       var t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
@@ -2139,6 +3292,28 @@ object Round15Ops extends Family {
           sum("clv_cents").as("clv_mass_cents"),
           expr("SUM(clv_cents) DIV COUNT(*)").as("clv_per_customer"))
         .orderBy("cohort")
+    },
+      {
+      val dfLadder = Seq(952380L, 907028L, 863836L, 822700L, 783523L, 746212L, 710678L, 676836L)
+      val steps = (1 to 8).map { p =>
+        s"""c$p AS (
+           |  SELECT k, cohort, r_milli, margin, surv,
+           |    clv_num + (margin * surv) // 1000000 * ${dfLadder(p - 1)} AS clv_num
+           |  FROM (SELECT k, cohort, r_milli, margin,
+           |      (surv * r_milli) // 1000 AS surv, clv_num FROM c${p - 1}) q)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH c0 AS (
+         |  SELECT CAST(c_custkey AS BIGINT) AS k, CAST(c_custkey % 5 AS INT) AS cohort,
+         |    700 + (c_custkey % 5) * 50
+         |      + ${duckMd5Bits("rt", "c_custkey", 4)} % 50 AS r_milli,
+         |    ${duckMd5Bits("mg", "c_custkey", 6)} % 5000 + 500 AS margin,
+         |    CAST(1000000 AS BIGINT) AS surv, CAST(0 AS BIGINT) AS clv_num
+         |  FROM customer),
+         |$steps
+         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_customers,
+         |  CAST(SUM(clv_num // 1000000) AS BIGINT) AS clv_mass_cents,
+         |  CAST(SUM(clv_num // 1000000) // COUNT(*) AS BIGINT) AS clv_per_customer
+         |FROM c8 GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // Batch padding waste — the serving-throughput number a continuous
@@ -2149,7 +3324,7 @@ object Round15Ops extends Family {
     // sort) collapses the waste. Both strategies graded side by side:
     // batches, token mass, padding waste, waste ppm — sorted must waste
     // strictly less (the spec asserts it). Two window passes + rollups.
-    "llm_batch_padding" -> ((s, d) => {
+    Op("llm_batch_padding", (s, d) => {
       val req = Tables.events(s, d)
         .select(col("event_id"), (col("user_id") % 4).as("svc"))
         .withColumn("len", expr(
@@ -2175,7 +3350,36 @@ object Round15Ops extends Family {
         expr("(row_number() OVER (PARTITION BY svc ORDER BY len, event_id) - 1) DIV 16")),
         "2_length_bucketed")
       naive.unionByName(sorted).orderBy("strategy", "svc")
-    }),
+    },
+      s"""WITH req AS (
+        |  SELECT event_id, user_id % 4 AS svc,
+        |    ${duckMd5Bits("bl", "event_id", 6)} % 491 + 10 AS len
+        |  FROM events),
+        |a1 AS (SELECT svc, len,
+        |    (ROW_NUMBER() OVER (PARTITION BY svc ORDER BY event_id) - 1) // 16 AS batch
+        |  FROM req),
+        |a2 AS (SELECT svc, len,
+        |    (ROW_NUMBER() OVER (PARTITION BY svc ORDER BY len, event_id) - 1) // 16 AS batch
+        |  FROM req),
+        |w1 AS (SELECT svc, batch, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(MAX(len) AS BIGINT) AS mx, CAST(SUM(len) AS BIGINT) AS tok
+        |  FROM a1 GROUP BY 1, 2),
+        |w2 AS (SELECT svc, batch, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(MAX(len) AS BIGINT) AS mx, CAST(SUM(len) AS BIGINT) AS tok
+        |  FROM a2 GROUP BY 1, 2)
+        |SELECT strategy, svc, n_batches, token_mass, padding_waste, waste_ppm FROM (
+        |  SELECT '1_arrival' AS strategy, svc, CAST(COUNT(*) AS BIGINT) AS n_batches,
+        |    CAST(SUM(tok) AS BIGINT) AS token_mass,
+        |    CAST(SUM(mx * n - tok) AS BIGINT) AS padding_waste,
+        |    CAST((SUM(mx * n - tok) * 1000000) // (SUM(tok) + SUM(mx * n - tok)) AS BIGINT) AS waste_ppm
+        |  FROM w1 GROUP BY 2
+        |  UNION ALL
+        |  SELECT '2_length_bucketed', svc, CAST(COUNT(*) AS BIGINT),
+        |    CAST(SUM(tok) AS BIGINT),
+        |    CAST(SUM(mx * n - tok) AS BIGINT),
+        |    CAST((SUM(mx * n - tok) * 1000000) // (SUM(tok) + SUM(mx * n - tok)) AS BIGINT)
+        |  FROM w2 GROUP BY 2
+        |) ORDER BY strategy, svc""".stripMargin),
 
     // Int8 scalar quantization of embeddings — the 4× memory cut every
     // vector store offers: per-vector scale = max|x| in exact milli,
@@ -2185,7 +3389,7 @@ object Round15Ops extends Family {
     // Graded per cohort: vectors, saturated dims (|q| = 127 — exactly
     // the max-magnitude dims), error mass, max per-dim error (bounded
     // by scale: one quantization step). One explode + two rollups.
-    "llm_embed_int8_quantize" -> ((s, d) => {
+    Op("llm_embed_int8_quantize", (s, d) => {
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000) AS BIGINT))")
@@ -2203,7 +3407,25 @@ object Round15Ops extends Family {
           sum("err").as("err_mass"),
           max(expr("(err * 1000000) DIV scale")).as("max_err_ppm_of_scale"))
         .orderBy("cohort")
-    }),
+    },
+      """WITH v AS (
+        |  SELECT vec_id,
+        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(FLOOR(x * 1000) AS BIGINT)) AS xs
+        |  FROM embeddings),
+        |e AS (SELECT vec_id,
+        |    list_max(list_transform(xs, x -> abs(x))) AS scale,
+        |    unnest(xs) AS x
+        |  FROM v),
+        |q AS (SELECT vec_id % 4 AS cohort, vec_id, scale, x,
+        |    CASE WHEN x < 0 THEN -((-x * 127) // scale) ELSE (x * 127) // scale END AS q
+        |  FROM e WHERE scale > 0),
+        |r AS (SELECT cohort, vec_id, scale, q, abs(x * 127 - q * scale) AS err FROM q)
+        |SELECT cohort, CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_vecs,
+        |  CAST(SUM(CASE WHEN abs(q) = 127 THEN 1 ELSE 0 END) AS BIGINT) AS n_saturated,
+        |  CAST(SUM(CASE WHEN abs(q) > 127 THEN 1 ELSE 0 END) AS BIGINT) AS n_overflow,
+        |  CAST(SUM(err) AS BIGINT) AS err_mass,
+        |  CAST(MAX((err * 1000000) // scale) AS BIGINT) AS max_err_ppm_of_scale
+        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // 1-bit (sign) embedding sketch — the 32× memory cut binary
     // retrieval runs on: each 64-dim vector folds into two 32-bit sign
@@ -2212,7 +3434,7 @@ object Round15Ops extends Family {
     // against the exact cosine top-5 per probe (rounded sims + id
     // tie-breaks). The data-scaled work is one linear sketch pass + the
     // exact-scan recall baseline. Graded per probe: hits, recall ppm.
-    "llm_embed_binary_sketch" -> ((s, d) => {
+    Op("llm_embed_binary_sketch", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
         .withColumn("lo", expr(
@@ -2242,7 +3464,31 @@ object Round15Ops extends Family {
         .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
         .withColumn("recall_ppm", expr("n_hits * 200000"))
         .orderBy("probe_id")
-    }),
+    },
+      """WITH e AS (
+        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+        |    CAST(list_sum(list_transform(generate_series(1, 32),
+        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (i - 1)) ELSE 0 END)) AS BIGINT) AS lo,
+        |    CAST(list_sum(list_transform(generate_series(33, 64),
+        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (i - 33)) ELSE 0 END)) AS BIGINT) AS hi
+        |  FROM embeddings),
+        |p AS (SELECT vec_id AS probe_id, emb AS p_emb, lo AS plo, hi AS phi
+        |  FROM e WHERE vec_id < 10),
+        |h5 AS (SELECT probe_id, vec_id FROM (
+        |    SELECT p.probe_id, e.vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
+        |        ORDER BY bit_count(xor(e.lo, p.plo)) + bit_count(xor(e.hi, p.phi)), e.vec_id) AS r
+        |    FROM e CROSS JOIN p WHERE e.vec_id <> p.probe_id) q WHERE r <= 5),
+        |x5 AS (SELECT probe_id, vec_id FROM (
+        |    SELECT p.probe_id, e.vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
+        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, e.emb), 4) DESC, e.vec_id) AS r
+        |    FROM e CROSS JOIN p WHERE e.vec_id <> p.probe_id) q WHERE r <= 5)
+        |SELECT x.probe_id,
+        |  CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+        |  CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 200000 AS BIGINT) AS recall_ppm
+        |FROM x5 x LEFT JOIN h5 h ON h.probe_id = x.probe_id AND h.vec_id = x.vec_id
+        |GROUP BY 1 ORDER BY x.probe_id""".stripMargin),
 
     // Gift-card breakage — the unclaimed-balance revenue-recognition
     // number beside the trial balance: cards carry md5 issued cents and
@@ -2251,7 +3497,7 @@ object Round15Ops extends Family {
     // remainder (recognizable) vs live unredeemed (still a liability).
     // Per cohort: issued / redeemed / breakage / liability mass, exact
     // breakage ppm of issued. One projection + rollup, linear.
-    "agg_gift_card_breakage" -> ((s, d) => {
+    Op("agg_gift_card_breakage", (s, d) => {
       Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 4).cast("int"))
@@ -2272,7 +3518,23 @@ object Round15Ops extends Family {
         .withColumn("breakage_ppm",
           expr("(breakage_mass * 1000000) DIV issued_mass"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(c_custkey % 4 AS INT) AS cohort,
+        |    ${duckMd5Bits("gc", "c_custkey", 6)} % 20000 + 500 AS issued,
+        |    LEAST(${duckMd5Bits("gr", "c_custkey", 6)} % 101
+        |      + CASE WHEN c_custkey % 4 = 2 THEN 40 ELSE 0 END, 100) AS redeem_pct,
+        |    c_custkey % 5 = 3 AS expired
+        |  FROM customer),
+        |r AS (SELECT cohort, issued, (issued * redeem_pct) // 100 AS redeemed, expired FROM t)
+        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_cards,
+        |  CAST(SUM(issued) AS BIGINT) AS issued_mass,
+        |  CAST(SUM(redeemed) AS BIGINT) AS redeemed_mass,
+        |  CAST(SUM(CASE WHEN expired THEN issued - redeemed ELSE 0 END) AS BIGINT) AS breakage_mass,
+        |  CAST(SUM(CASE WHEN NOT expired THEN issued - redeemed ELSE 0 END) AS BIGINT) AS liability_mass,
+        |  CAST((SUM(CASE WHEN expired THEN issued - redeemed ELSE 0 END) * 1000000)
+        |    // SUM(issued) AS BIGINT) AS breakage_ppm
+        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Column null-rate drift — the schema-drift monitor a feed contract
     // runs between snapshots (warehouse_expectations verdicts ONE
@@ -2281,7 +3543,7 @@ object Round15Ops extends Family {
     // 'email' plants a 10% → 40% null jump in B (the upstream-regression
     // signature), 'phone' stays at 20% both sides. Stack projection +
     // one rollup, linear.
-    "warehouse_schema_drift" -> ((s, d) => {
+    Op("warehouse_schema_drift", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("snapshot", when(col("k") % 2 === 0, "a").otherwise("b"))
@@ -2304,7 +3566,27 @@ object Round15Ops extends Family {
         .withColumn("drift_ppm", abs(col("null_ppm_a") - col("null_ppm_b")))
         .withColumn("drifted", col("drift_ppm") > 100000L)
         .orderBy("col_name")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CASE WHEN c_custkey % 2 = 0 THEN 'a' ELSE 'b' END AS snapshot,
+        |    ${duckMd5Bits("ne", "c_custkey", 6)} % 10
+        |      < CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 4 END AS email_null,
+        |    ${duckMd5Bits("np", "c_custkey", 6)} % 10 < 2 AS phone_null
+        |  FROM customer),
+        |u AS (
+        |  SELECT snapshot, 'email' AS col_name, email_null AS is_null FROM t
+        |  UNION ALL SELECT snapshot, 'phone', phone_null FROM t),
+        |rates AS (
+        |  SELECT col_name, snapshot, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST((SUM(CASE WHEN is_null THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS null_ppm
+        |  FROM u GROUP BY 1, 2)
+        |SELECT a.col_name, a.n AS n_a, a.null_ppm AS null_ppm_a,
+        |  b.n AS n_b, b.null_ppm AS null_ppm_b,
+        |  abs(a.null_ppm - b.null_ppm) AS drift_ppm,
+        |  abs(a.null_ppm - b.null_ppm) > 100000 AS drifted
+        |FROM rates a JOIN rates b ON b.col_name = a.col_name
+        |WHERE a.snapshot = 'a' AND b.snapshot = 'b'
+        |ORDER BY a.col_name""".stripMargin),
 
     // Conversation-window truncation — the context-cap policy a chat
     // serving layer applies (keep the MOST RECENT turns whose token sum
@@ -2313,7 +3595,7 @@ object Round15Ops extends Family {
     // iteration), dropped turns censused with their token mass — the
     // context the model silently never saw, the #1 cause of "it forgot
     // my earlier message" reports. One window + rollup per cohort.
-    "llm_turn_truncation" -> ((s, d) => {
+    Op("llm_turn_truncation", (s, d) => {
       val turns = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("cv"))
         .withColumn("turn", explode(expr("sequence(0, 11)")))
@@ -2331,7 +3613,23 @@ object Round15Ops extends Family {
           sum(when(!col("kept"), col("tok")).otherwise(0L)).as("dropped_token_mass"))
         .withColumn("dropped_ppm", expr("(n_dropped * 1000000) DIV n_turns"))
         .orderBy("cohort")
-    })
+    },
+      s"""WITH turns AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS cv, CAST(j.range AS INT) AS turn,
+        |    ${duckMd5Bits("'tt:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 6)} % 290 + 10 AS tok
+        |  FROM orders CROSS JOIN range(0, 12) j),
+        |k AS (
+        |  SELECT cv, turn, tok,
+        |    SUM(tok) OVER (PARTITION BY cv ORDER BY turn DESC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 1200 AS kept
+        |  FROM turns)
+        |SELECT cv % 4 AS cohort, CAST(COUNT(DISTINCT cv) AS BIGINT) AS n_conversations,
+        |  CAST(COUNT(*) AS BIGINT) AS n_turns,
+        |  CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        |  CAST(SUM(CASE WHEN NOT kept THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
+        |  CAST(SUM(CASE WHEN NOT kept THEN tok ELSE 0 END) AS BIGINT) AS dropped_token_mass,
+        |  CAST((SUM(CASE WHEN NOT kept THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS dropped_ppm
+        |FROM k GROUP BY 1 ORDER BY cohort""".stripMargin)
   )
 
   /** Minimal USTAR tar writer/reader for `source_webdataset_shard` —
@@ -2379,28 +3677,6 @@ object Round15Ops extends Family {
       out.result()
     }
   }
-
-  /** Shared DuckDB SQL for the FS EM fixture's blocked pattern census. */
-  private val fsEmPatternsSql: String =
-    """base AS (
-      |  SELECT CAST(c_custkey AS BIGINT) AS k,
-      |    CAST(c_nationkey AS BIGINT) AS city0,
-      |    'cust_' || lpad(CAST(c_custkey AS VARCHAR), 7, '0') AS name,
-      |    1950 + CAST(c_custkey AS BIGINT) % 50 AS yob0
-      |  FROM customer),
-      |m AS (SELECT k AS mk, name AS mname, city0 AS mcity, yob0 AS myob,
-      |    substring(name, 1, 11) AS block FROM base),
-      |dd AS (
-      |  SELECT k AS dk,
-      |    CASE WHEN k % 21 = 8 THEN substring(name, 1, 11) || 'X' ELSE name END AS dname,
-      |    CASE WHEN k % 15 = 2 THEN (city0 + 1) % 25 ELSE city0 END AS dcity,
-      |    CASE WHEN k % 9 = 5 THEN yob0 + 1 ELSE yob0 END AS dyob,
-      |    substring(name, 1, 11) AS block
-      |  FROM base),
-      |pat AS (
-      |  SELECT dname = mname AS gn, dcity = mcity AS gc, dyob = myob AS gy,
-      |    CAST(COUNT(*) AS BIGINT) AS cnt
-      |  FROM dd JOIN m ON dd.block = m.block GROUP BY 1, 2, 3)""".stripMargin
 
   /** One EM E-step in DuckDB: responsibilities from the params CTE `p`. */
   private def fsEmEstepSql(out: String, p: String): String =
@@ -2486,1394 +3762,4 @@ object Round15Ops extends Family {
        |    SELECT probe_id, node,
        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, node) AS r
        |    FROM s$i) q WHERE r <= $k)""".stripMargin
-
-  val oracles: Map[String, String] = unique(
-    "llm_ann_hnsw_layered" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         |nn AS (SELECT COUNT(*) AS n, (COUNT(*) + 15) // 16 AS n2,
-         |       (COUNT(*) + 3) // 4 AS n1 FROM e),
-         |p AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
-         |b3 AS (SELECT probe_id, CAST(0 AS BIGINT) AS node FROM p),
-         |${layerHopSql("u2", "b3", 2, "n2", 16L, 4, 1)},
-         |${layerHopSql("u1", "bu2", 1, "n1", 4L, 4, 1)},
-         |${layerHopSql("01", "bu1", 0, "n", 1L, 8, 8)},
-         |${layerHopSql("02", "b01", 0, "n", 1L, 8, 8)},
-         |visited AS (
-         |  SELECT probe_id, node, MAX(sim) AS sim FROM (
-         |    SELECT * FROM su2 UNION ALL SELECT * FROM su1
-         |    UNION ALL SELECT * FROM s01 UNION ALL SELECT * FROM s02) u
-         |  GROUP BY 1, 2),
-         |found5 AS (
-         |  SELECT probe_id, node FROM (
-         |    SELECT probe_id, node,
-         |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, node) AS r
-         |    FROM visited) q WHERE r <= 5),
-         |exact5 AS (
-         |  SELECT probe_id, node FROM (
-         |    SELECT p.probe_id, e.vec_id AS node,
-         |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
-         |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, e.emb), 4) DESC, e.vec_id) AS r
-         |    FROM p JOIN e ON e.vec_id <> p.probe_id) q WHERE r <= 5),
-         |hits AS (
-         |  SELECT x.probe_id,
-         |    CAST(SUM(CASE WHEN f.node IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |  FROM exact5 x LEFT JOIN found5 f
-         |    ON f.probe_id = x.probe_id AND f.node = x.node
-         |  GROUP BY 1),
-         |vs AS (SELECT probe_id, CAST(COUNT(*) AS BIGINT) AS n_visited FROM visited GROUP BY 1)
-         |SELECT vs.probe_id, bu1.node AS entry_l0, vs.n_visited, h.n_hits,
-         |  h.n_hits * 200000 AS recall_ppm
-         |FROM vs JOIN bu1 ON bu1.probe_id = vs.probe_id
-         |JOIN hits h ON h.probe_id = vs.probe_id
-         |ORDER BY vs.probe_id""".stripMargin,
-
-    "agg_gift_card_breakage" ->
-      s"""WITH t AS (
-        |  SELECT CAST(c_custkey % 4 AS INT) AS cohort,
-        |    ${duckMd5Bits("gc", "c_custkey", 6)} % 20000 + 500 AS issued,
-        |    LEAST(${duckMd5Bits("gr", "c_custkey", 6)} % 101
-        |      + CASE WHEN c_custkey % 4 = 2 THEN 40 ELSE 0 END, 100) AS redeem_pct,
-        |    c_custkey % 5 = 3 AS expired
-        |  FROM customer),
-        |r AS (SELECT cohort, issued, (issued * redeem_pct) // 100 AS redeemed, expired FROM t)
-        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_cards,
-        |  CAST(SUM(issued) AS BIGINT) AS issued_mass,
-        |  CAST(SUM(redeemed) AS BIGINT) AS redeemed_mass,
-        |  CAST(SUM(CASE WHEN expired THEN issued - redeemed ELSE 0 END) AS BIGINT) AS breakage_mass,
-        |  CAST(SUM(CASE WHEN NOT expired THEN issued - redeemed ELSE 0 END) AS BIGINT) AS liability_mass,
-        |  CAST((SUM(CASE WHEN expired THEN issued - redeemed ELSE 0 END) * 1000000)
-        |    // SUM(issued) AS BIGINT) AS breakage_ppm
-        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "warehouse_schema_drift" ->
-      s"""WITH t AS (
-        |  SELECT CASE WHEN c_custkey % 2 = 0 THEN 'a' ELSE 'b' END AS snapshot,
-        |    ${duckMd5Bits("ne", "c_custkey", 6)} % 10
-        |      < CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 4 END AS email_null,
-        |    ${duckMd5Bits("np", "c_custkey", 6)} % 10 < 2 AS phone_null
-        |  FROM customer),
-        |u AS (
-        |  SELECT snapshot, 'email' AS col_name, email_null AS is_null FROM t
-        |  UNION ALL SELECT snapshot, 'phone', phone_null FROM t),
-        |rates AS (
-        |  SELECT col_name, snapshot, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST((SUM(CASE WHEN is_null THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS null_ppm
-        |  FROM u GROUP BY 1, 2)
-        |SELECT a.col_name, a.n AS n_a, a.null_ppm AS null_ppm_a,
-        |  b.n AS n_b, b.null_ppm AS null_ppm_b,
-        |  abs(a.null_ppm - b.null_ppm) AS drift_ppm,
-        |  abs(a.null_ppm - b.null_ppm) > 100000 AS drifted
-        |FROM rates a JOIN rates b ON b.col_name = a.col_name
-        |WHERE a.snapshot = 'a' AND b.snapshot = 'b'
-        |ORDER BY a.col_name""".stripMargin,
-
-    "llm_turn_truncation" ->
-      s"""WITH turns AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS cv, CAST(j.range AS INT) AS turn,
-        |    ${duckMd5Bits("'tt:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 6)} % 290 + 10 AS tok
-        |  FROM orders CROSS JOIN range(0, 12) j),
-        |k AS (
-        |  SELECT cv, turn, tok,
-        |    SUM(tok) OVER (PARTITION BY cv ORDER BY turn DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 1200 AS kept
-        |  FROM turns)
-        |SELECT cv % 4 AS cohort, CAST(COUNT(DISTINCT cv) AS BIGINT) AS n_conversations,
-        |  CAST(COUNT(*) AS BIGINT) AS n_turns,
-        |  CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  CAST(SUM(CASE WHEN NOT kept THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-        |  CAST(SUM(CASE WHEN NOT kept THEN tok ELSE 0 END) AS BIGINT) AS dropped_token_mass,
-        |  CAST((SUM(CASE WHEN NOT kept THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS dropped_ppm
-        |FROM k GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "llm_batch_padding" ->
-      s"""WITH req AS (
-        |  SELECT event_id, user_id % 4 AS svc,
-        |    ${duckMd5Bits("bl", "event_id", 6)} % 491 + 10 AS len
-        |  FROM events),
-        |a1 AS (SELECT svc, len,
-        |    (ROW_NUMBER() OVER (PARTITION BY svc ORDER BY event_id) - 1) // 16 AS batch
-        |  FROM req),
-        |a2 AS (SELECT svc, len,
-        |    (ROW_NUMBER() OVER (PARTITION BY svc ORDER BY len, event_id) - 1) // 16 AS batch
-        |  FROM req),
-        |w1 AS (SELECT svc, batch, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(MAX(len) AS BIGINT) AS mx, CAST(SUM(len) AS BIGINT) AS tok
-        |  FROM a1 GROUP BY 1, 2),
-        |w2 AS (SELECT svc, batch, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(MAX(len) AS BIGINT) AS mx, CAST(SUM(len) AS BIGINT) AS tok
-        |  FROM a2 GROUP BY 1, 2)
-        |SELECT strategy, svc, n_batches, token_mass, padding_waste, waste_ppm FROM (
-        |  SELECT '1_arrival' AS strategy, svc, CAST(COUNT(*) AS BIGINT) AS n_batches,
-        |    CAST(SUM(tok) AS BIGINT) AS token_mass,
-        |    CAST(SUM(mx * n - tok) AS BIGINT) AS padding_waste,
-        |    CAST((SUM(mx * n - tok) * 1000000) // (SUM(tok) + SUM(mx * n - tok)) AS BIGINT) AS waste_ppm
-        |  FROM w1 GROUP BY 2
-        |  UNION ALL
-        |  SELECT '2_length_bucketed', svc, CAST(COUNT(*) AS BIGINT),
-        |    CAST(SUM(tok) AS BIGINT),
-        |    CAST(SUM(mx * n - tok) AS BIGINT),
-        |    CAST((SUM(mx * n - tok) * 1000000) // (SUM(tok) + SUM(mx * n - tok)) AS BIGINT)
-        |  FROM w2 GROUP BY 2
-        |) ORDER BY strategy, svc""".stripMargin,
-
-    "llm_embed_int8_quantize" ->
-      """WITH v AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(FLOOR(x * 1000) AS BIGINT)) AS xs
-        |  FROM embeddings),
-        |e AS (SELECT vec_id,
-        |    list_max(list_transform(xs, x -> abs(x))) AS scale,
-        |    unnest(xs) AS x
-        |  FROM v),
-        |q AS (SELECT vec_id % 4 AS cohort, vec_id, scale, x,
-        |    CASE WHEN x < 0 THEN -((-x * 127) // scale) ELSE (x * 127) // scale END AS q
-        |  FROM e WHERE scale > 0),
-        |r AS (SELECT cohort, vec_id, scale, q, abs(x * 127 - q * scale) AS err FROM q)
-        |SELECT cohort, CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_vecs,
-        |  CAST(SUM(CASE WHEN abs(q) = 127 THEN 1 ELSE 0 END) AS BIGINT) AS n_saturated,
-        |  CAST(SUM(CASE WHEN abs(q) > 127 THEN 1 ELSE 0 END) AS BIGINT) AS n_overflow,
-        |  CAST(SUM(err) AS BIGINT) AS err_mass,
-        |  CAST(MAX((err * 1000000) // scale) AS BIGINT) AS max_err_ppm_of_scale
-        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "llm_embed_binary_sketch" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-        |    CAST(list_sum(list_transform(generate_series(1, 32),
-        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (i - 1)) ELSE 0 END)) AS BIGINT) AS lo,
-        |    CAST(list_sum(list_transform(generate_series(33, 64),
-        |      i -> CASE WHEN embedding[i] > 0 THEN (1::BIGINT << (i - 33)) ELSE 0 END)) AS BIGINT) AS hi
-        |  FROM embeddings),
-        |p AS (SELECT vec_id AS probe_id, emb AS p_emb, lo AS plo, hi AS phi
-        |  FROM e WHERE vec_id < 10),
-        |h5 AS (SELECT probe_id, vec_id FROM (
-        |    SELECT p.probe_id, e.vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
-        |        ORDER BY bit_count(xor(e.lo, p.plo)) + bit_count(xor(e.hi, p.phi)), e.vec_id) AS r
-        |    FROM e CROSS JOIN p WHERE e.vec_id <> p.probe_id) q WHERE r <= 5),
-        |x5 AS (SELECT probe_id, vec_id FROM (
-        |    SELECT p.probe_id, e.vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
-        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, e.emb), 4) DESC, e.vec_id) AS r
-        |    FROM e CROSS JOIN p WHERE e.vec_id <> p.probe_id) q WHERE r <= 5)
-        |SELECT x.probe_id,
-        |  CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |  CAST(SUM(CASE WHEN h.vec_id IS NOT NULL THEN 1 ELSE 0 END) * 200000 AS BIGINT) AS recall_ppm
-        |FROM x5 x LEFT JOIN h5 h ON h.probe_id = x.probe_id AND h.vec_id = x.vec_id
-        |GROUP BY 1 ORDER BY x.probe_id""".stripMargin,
-
-    "join_fs_tf_adjust" ->
-      s"""WITH a AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS ak,
-        |    CASE WHEN c_custkey % 3 < 2
-        |      THEN 'S' || lpad(CAST(${duckMd5Bits("tf", "c_custkey // 3", 6)} % 200 AS VARCHAR), 3, '0')
-        |      ELSE 'R' || CAST(c_custkey AS VARCHAR) END AS surname,
-        |    CAST(c_nationkey AS BIGINT) AS acity
-        |  FROM customer),
-        |b AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS bk,
-        |    CASE WHEN c_custkey % 3 < 2
-        |      THEN 'S' || lpad(CAST(${duckMd5Bits("tf", "c_custkey // 3", 6)} % 200 AS VARCHAR), 3, '0')
-        |      ELSE 'R' || CAST(c_custkey AS VARCHAR) END AS surname,
-        |    CASE WHEN c_custkey % 15 = 2 THEN (CAST(c_nationkey AS BIGINT) + 1) % 25
-        |      ELSE CAST(c_nationkey AS BIGINT) END AS bcity
-        |  FROM customer),
-        |freq AS (SELECT surname, CAST(COUNT(*) AS BIGINT) AS f FROM a GROUP BY 1),
-        |pr AS (
-        |  SELECT CASE WHEN f = 1 THEN '1_unique'
-        |      WHEN f <= 20 THEN '2_uncommon' ELSE '3_common' END AS bucket,
-        |    (CASE WHEN f = 1 THEN 240 WHEN f <= 20 THEN 160 ELSE 80 END
-        |      + CASE WHEN acity = bcity THEN 80 ELSE -40 END) >= 200 AS lnk,
-        |    ak = bk AS tm
-        |  FROM a JOIN b USING (surname) JOIN freq USING (surname)
-        |  WHERE f <= 2000)
-        |SELECT bucket, n_pairs, n_links, n_true, n_true_linked FROM (
-        |  SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |    CAST(SUM(CASE WHEN lnk THEN 1 ELSE 0 END) AS BIGINT) AS n_links,
-        |    CAST(SUM(CASE WHEN tm THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
-        |    CAST(SUM(CASE WHEN tm AND lnk THEN 1 ELSE 0 END) AS BIGINT) AS n_true_linked
-        |  FROM pr GROUP BY 1
-        |  UNION ALL
-        |  SELECT '4_oversize_skipped', CAST(coalesce(SUM(f * f), 0) AS BIGINT),
-        |    CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-        |  FROM freq WHERE f > 2000
-        |) ORDER BY bucket""".stripMargin,
-
-    "join_er_split_detection" -> {
-      val rounds = (1 to 3).map { r =>
-        s"""l$r AS (
-           |  SELECT x.rid, LEAST(x.l, coalesce(c.cand, x.l)) AS l, x.p
-           |  FROM l${r - 1} x LEFT JOIN (
-           |    SELECT e.b AS rid, MIN(y.l) AS cand
-           |    FROM edges e JOIN l${r - 1} y ON y.rid = e.a GROUP BY 1) c
-           |  ON c.rid = x.rid)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pp AS (SELECT CAST(c_custkey AS BIGINT) AS p FROM customer),
-         |recs AS (SELECT p, p * 3 + s.range AS rid FROM pp CROSS JOIN range(0, 3) s),
-         |e01 AS (SELECT p * 3 AS a, p * 3 + 1 AS b FROM pp WHERE p % 7 <> 3 AND p % 11 <> 4),
-         |e12 AS (SELECT p * 3 + 1 AS a, p * 3 + 2 AS b FROM pp WHERE p % 11 <> 4),
-         |und AS (SELECT a, b FROM e01 UNION ALL SELECT a, b FROM e12),
-         |edges AS (SELECT a, b FROM und UNION ALL SELECT b AS a, a AS b FROM und),
-         |l0 AS (SELECT rid, rid AS l, p FROM recs),
-         |$rounds
-         |SELECT n_clusters, CAST(COUNT(*) AS BIGINT) AS n_persons,
-         |  CAST(COUNT(*) * 3 AS BIGINT) AS n_records
-         |FROM (SELECT p, CAST(COUNT(DISTINCT l) AS BIGINT) AS n_clusters
-         |      FROM l3 GROUP BY 1) q
-         |GROUP BY 1 ORDER BY n_clusters""".stripMargin
-    },
-
-    "agg_clv_discounted" -> {
-      val dfLadder = Seq(952380L, 907028L, 863836L, 822700L, 783523L, 746212L, 710678L, 676836L)
-      val steps = (1 to 8).map { p =>
-        s"""c$p AS (
-           |  SELECT k, cohort, r_milli, margin, surv,
-           |    clv_num + (margin * surv) // 1000000 * ${dfLadder(p - 1)} AS clv_num
-           |  FROM (SELECT k, cohort, r_milli, margin,
-           |      (surv * r_milli) // 1000 AS surv, clv_num FROM c${p - 1}) q)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH c0 AS (
-         |  SELECT CAST(c_custkey AS BIGINT) AS k, CAST(c_custkey % 5 AS INT) AS cohort,
-         |    700 + (c_custkey % 5) * 50
-         |      + ${duckMd5Bits("rt", "c_custkey", 4)} % 50 AS r_milli,
-         |    ${duckMd5Bits("mg", "c_custkey", 6)} % 5000 + 500 AS margin,
-         |    CAST(1000000 AS BIGINT) AS surv, CAST(0 AS BIGINT) AS clv_num
-         |  FROM customer),
-         |$steps
-         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_customers,
-         |  CAST(SUM(clv_num // 1000000) AS BIGINT) AS clv_mass_cents,
-         |  CAST(SUM(clv_num // 1000000) // COUNT(*) AS BIGINT) AS clv_per_customer
-         |FROM c8 GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "agg_erlang_b" -> {
-      val steps = (1 to 12).map { n =>
-        s"""e$n AS (SELECT g, a_milli,
-           |    (a_milli * b * 1000000) // (${n * 1000000000L} + a_milli * b) AS b
-           |  FROM e${n - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (
-         |  SELECT CAST(s_suppkey AS BIGINT) AS g,
-         |    ${duckMd5Bits("el", "s_suppkey", 6)} % 19000 + 1000 AS a_milli,
-         |    CAST(1000000 AS BIGINT) AS b
-         |  FROM supplier),
-         |$steps
-         |SELECT CASE WHEN a_milli < 5000 THEN '1_light'
-         |    WHEN a_milli < 10000 THEN '2_medium' ELSE '3_heavy' END AS band,
-         |  CAST(COUNT(*) AS BIGINT) AS n_groups,
-         |  CAST(SUM(b) AS BIGINT) AS blocking_mass_ppm,
-         |  CAST(MAX(b) AS BIGINT) AS max_blocking_ppm,
-         |  CAST(MIN(b) AS BIGINT) AS min_blocking_ppm
-         |FROM e12 GROUP BY 1 ORDER BY band""".stripMargin
-    },
-
-    "agg_fill_rate" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey % 4 AS INT) AS cohort,
-        |    ${duckMd5Bits("fd", "o_orderkey", 6)} % 100 + 1 AS demand,
-        |    ${duckMd5Bits("fs", "o_orderkey", 6)} % 120
-        |      + CASE WHEN o_orderkey % 4 = 2 THEN 0 ELSE 40 END AS stock
-        |  FROM orders),
-        |f AS (SELECT cohort, demand, LEAST(demand, stock) AS fulfilled FROM t)
-        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(CASE WHEN fulfilled < demand THEN 1 ELSE 0 END) AS BIGINT) AS n_stockouts,
-        |  CAST(SUM(demand) AS BIGINT) AS demand_units,
-        |  CAST(SUM(fulfilled) AS BIGINT) AS fulfilled_units,
-        |  CAST((SUM(fulfilled) * 1000000) // SUM(demand) AS BIGINT) AS fill_ppm
-        |FROM f GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "agg_laplace_ctr" ->
-      s"""WITH t AS (
-        |  SELECT CAST(p_partkey % 3 AS INT) AS cohort,
-        |    ${duckMd5Bits("lv", "p_partkey", 6)} % 100 AS views,
-        |    p_partkey AS k
-        |  FROM part),
-        |c AS (
-        |  SELECT cohort, views,
-        |    CASE WHEN views = 0 THEN 0
-        |      ELSE ${duckMd5Bits("lk", "k", 6)} % (views + 1) END AS clicks
-        |  FROM t),
-        |r AS (
-        |  SELECT cohort, views, clicks,
-        |    (clicks * 1000000) // NULLIF(views, 0) AS raw_ppm,
-        |    ((clicks + 5) * 1000000) // (views + 50) AS smoothed_ppm
-        |  FROM c)
-        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_items,
-        |  CAST(SUM(CASE WHEN views = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_view,
-        |  CAST(SUM(CASE WHEN raw_ppm = 0 OR raw_ppm = 1000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_raw_extreme,
-        |  CAST(SUM(CASE WHEN smoothed_ppm = 0 OR smoothed_ppm = 1000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_smoothed_extreme,
-        |  CAST(SUM(smoothed_ppm) AS BIGINT) AS smoothed_mass_ppm
-        |FROM r GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "warehouse_trial_balance" ->
-      s"""WITH ev AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_orderkey % 12 AS INT) AS period,
-        |    ${duckMd5Bits("tb", "o_orderkey", 6)} % 500000 + 100 AS cents,
-        |    o_orderkey % 997 = 13 AS broken
-        |  FROM orders),
-        |ln AS (
-        |  SELECT period, cents, 'debit' AS side FROM ev
-        |  UNION ALL
-        |  SELECT period, cents, 'credit' FROM ev WHERE NOT broken),
-        |bal AS (
-        |  SELECT period,
-        |    CAST(SUM(CASE WHEN side = 'debit' THEN cents ELSE 0 END) AS BIGINT) AS debit_mass,
-        |    CAST(SUM(CASE WHEN side = 'credit' THEN cents ELSE 0 END) AS BIGINT) AS credit_mass
-        |  FROM ln GROUP BY 1),
-        |bc AS (
-        |  SELECT period, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |    CAST(SUM(CASE WHEN broken THEN 1 ELSE 0 END) AS BIGINT) AS n_broken,
-        |    CAST(SUM(CASE WHEN broken THEN cents ELSE 0 END) AS BIGINT) AS broken_mass
-        |  FROM ev GROUP BY 1)
-        |SELECT bal.period, bal.debit_mass, bal.credit_mass,
-        |  bal.debit_mass - bal.credit_mass AS imbalance,
-        |  bc.n_events, bc.n_broken, bc.broken_mass
-        |FROM bal JOIN bc ON bc.period = bal.period ORDER BY bal.period""".stripMargin,
-
-    "warehouse_ar_aging" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_custkey % 4 AS INT) AS cohort,
-        |    ${duckMd5Bits("ar", "o_orderkey", 6)} % 120
-        |      + CASE WHEN o_custkey % 4 = 1 THEN 30 ELSE 0 END AS age_days,
-        |    ${duckMd5Bits("ai", "o_orderkey", 6)} % 800000 + 5000 AS cents
-        |  FROM orders),
-        |b AS (
-        |  SELECT cohort, cents,
-        |    CASE WHEN age_days = 0 THEN '0_current'
-        |      WHEN age_days <= 30 THEN '1_1to30'
-        |      WHEN age_days <= 60 THEN '2_31to60'
-        |      WHEN age_days <= 90 THEN '3_61to90'
-        |      ELSE '4_over90' END AS bucket,
-        |    CASE WHEN age_days <= 30 THEN 0
-        |      WHEN age_days <= 60 THEN 1
-        |      WHEN age_days <= 90 THEN 2 ELSE 3 END AS dunning_level
-        |  FROM t)
-        |SELECT cohort, bucket, CAST(COUNT(*) AS BIGINT) AS n_invoices,
-        |  CAST(SUM(cents) AS BIGINT) AS exposure_cents,
-        |  CAST(MAX(dunning_level) AS BIGINT) AS dunning_level
-        |FROM b GROUP BY 1, 2 ORDER BY cohort, bucket""".stripMargin,
-
-    "warehouse_late_arriving_fact" ->
-      s"""WITH t AS (
-        |  SELECT CAST(event_id % 8 AS INT) AS bucket,
-        |    ${duckMd5Bits("la", "event_id", 6)} % 21
-        |      + CASE WHEN event_id % 13 = 7 THEN 50 ELSE 0 END AS delay,
-        |    ${duckMd5Bits("lc", "event_id", 6)} % 10000 AS cents
-        |  FROM events)
-        |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_facts,
-        |  CAST(SUM(CASE WHEN delay > 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-        |  CAST(SUM(CASE WHEN delay > 40 THEN 1 ELSE 0 END) AS BIGINT) AS n_restatements,
-        |  CAST(SUM(CASE WHEN delay > 40 THEN cents ELSE 0 END) AS BIGINT) AS restated_mass,
-        |  CAST((SUM(CASE WHEN delay > 10 THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS late_ppm
-        |FROM t GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "llm_pii_scan" ->
-      raw"""WITH t AS (
-        |  SELECT CAST(doc_id % 5 AS INT) AS cls, text,
-        |    ${duckMd5Bits("pii", "doc_id", 8)} AS g
-        |  FROM documents),
-        |p AS (
-        |  SELECT cls, text,
-        |    CASE WHEN cls = 1 THEN ' ssn ' || lpad(CAST(g % 900 + 100 AS VARCHAR), 3, '0')
-        |        || '-' || lpad(CAST(g % 90 + 10 AS VARCHAR), 2, '0')
-        |        || '-' || lpad(CAST(g % 9000 + 1000 AS VARCHAR), 4, '0')
-        |      WHEN cls = 2 THEN ' card 4' || lpad(CAST(g % 1000 AS VARCHAR), 3, '0')
-        |        || ' ' || lpad(CAST(g % 10000 AS VARCHAR), 4, '0')
-        |        || ' ' || lpad(CAST(g % 10000 AS VARCHAR), 4, '0')
-        |        || ' ' || lpad(CAST(g % 10000 AS VARCHAR), 4, '0')
-        |      WHEN cls = 3 THEN ' mail user' || CAST(g % 1000 AS VARCHAR) || '@example.com'
-        |      WHEN cls = 4 THEN ' call (555) ' || lpad(CAST(g % 900 + 100 AS VARCHAR), 3, '0')
-        |        || '-' || lpad(CAST(g % 9000 + 1000 AS VARCHAR), 4, '0')
-        |      ELSE '' END AS planted
-        |  FROM t),
-        |f AS (SELECT cls, planted, text || planted AS ftxt FROM p)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, '[0-9]{3}-[0-9]{2}-[0-9]{4}'))) AS BIGINT) AS ssn_hits,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, '4[0-9]{3} [0-9]{4} [0-9]{4} [0-9]{4}'))) AS BIGINT) AS pan_hits,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, '[a-z0-9]+@[a-z]+\.[a-z]+'))) AS BIGINT) AS email_hits,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, '\([0-9]{3}\) [0-9]{3}-[0-9]{4}'))) AS BIGINT) AS phone_hits,
-        |  CAST(SUM(len(planted)) AS BIGINT) AS redaction_char_mass
-        |FROM f GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "llm_secret_scan" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id % 4 AS INT) AS cls, text,
-        |    md5('sk:' || CAST(doc_id AS VARCHAR)) AS h,
-        |    md5('sk2:' || CAST(doc_id AS VARCHAR)) AS h2,
-        |    md5('sk3:' || CAST(doc_id AS VARCHAR)) AS h3
-        |  FROM documents),
-        |p AS (
-        |  SELECT cls, text,
-        |    CASE WHEN cls = 1 THEN ' AKIA' || upper(substring(regexp_replace(h, '[^a-z0-9]', '', 'g'), 1, 16))
-        |      WHEN cls = 2 THEN ' ghp_' || h || substring(h2, 1, 4)
-        |      WHEN cls = 3 THEN ' sha ' || h || substring(h3, 1, 8)
-        |      ELSE ' ref ' || substring(h, 1, 16) END AS planted
-        |  FROM t),
-        |f AS (SELECT cls, text || planted AS ftxt FROM p)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, 'AKIA[A-Z0-9]{16}'))) AS BIGINT) AS akia_hits,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, 'ghp_[A-Za-z0-9]{36}'))) AS BIGINT) AS ghp_hits,
-        |  CAST(SUM(len(regexp_extract_all(ftxt, '[0-9a-f]{40}'))) AS BIGINT) AS hex40_hits
-        |FROM f GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "llm_pmi_collocations" ->
-      """WITH bg AS (
-        |  SELECT t[i] AS x, t[i + 1] AS y FROM (
-        |    SELECT string_split(text, ' ') AS t FROM documents) d,
-        |    LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i) s
-        |  WHERE len(t) > 1),
-        |nn AS (SELECT COUNT(*) AS n FROM bg),
-        |cx AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS c_x FROM bg GROUP BY 1),
-        |cy AS (SELECT y, CAST(COUNT(*) AS BIGINT) AS c_y FROM bg GROUP BY 1),
-        |cxy AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS c_xy FROM bg GROUP BY 1, 2)
-        |SELECT b.x, b.y, b.c_xy, cx.c_x, cy.c_y,
-        |  CAST((CAST(b.c_xy AS HUGEINT) * (SELECT n FROM nn) * 1000000)
-        |    // (CAST(cx.c_x AS HUGEINT) * cy.c_y) AS BIGINT) AS ratio_ppm
-        |FROM cxy b JOIN cx ON cx.x = b.x JOIN cy ON cy.y = b.y
-        |WHERE b.c_xy >= 5
-        |ORDER BY ratio_ppm DESC, b.x, b.y LIMIT 20""".stripMargin,
-
-    "agg_loan_amortization" -> {
-      val months = (1 to 12).map { m =>
-        s"""m$m AS (SELECT k, cohort, p0, pay,
-           |    interest_total + bal // 100 AS interest_total,
-           |    bal + bal // 100 - pay AS bal
-           |  FROM m${m - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH m0 AS (
-         |  SELECT CAST(c_custkey AS BIGINT) AS k, CAST(c_custkey % 4 AS INT) AS cohort,
-         |    ${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000 AS p0,
-         |    ((${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000)
-         |      * 10000 * 1126822) // 126822000000 AS pay,
-         |    ${duckMd5Bits("ln", "c_custkey", 8)} % 2000000 + 100000 AS bal,
-         |    CAST(0 AS BIGINT) AS interest_total
-         |  FROM customer),
-         |$months
-         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_loans,
-         |  CAST(SUM(p0) AS BIGINT) AS principal_mass,
-         |  CAST(SUM(pay * 12) AS BIGINT) AS scheduled_mass,
-         |  CAST(SUM(interest_total) AS BIGINT) AS interest_mass,
-         |  CAST(SUM(bal) AS BIGINT) AS residual_mass,
-         |  CAST(MAX(abs(bal)) AS BIGINT) AS max_residual
-         |FROM m12 GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "agg_bond_duration" ->
-      """WITH t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    CAST(c_custkey % 8 + 2 AS INT) AS coupon_pct,
-        |    CAST(s.range AS INT) AS t
-        |  FROM customer CROSS JOIN range(1, 9) s),
-        |c AS (
-        |  SELECT k, coupon_pct, t,
-        |    coupon_pct * 10000 + CASE WHEN t = 8 THEN 1000000 ELSE 0 END AS cf,
-        |    [952380, 907028, 863836, 822700, 783523, 746212, 710678, 676836][t] AS df
-        |  FROM t)
-        |SELECT coupon_pct, CAST(COUNT(DISTINCT k) AS BIGINT) AS n_bonds,
-        |  CAST(SUM(CAST(cf AS HUGEINT) * df) AS BIGINT) AS pv_num,
-        |  CAST((SUM(CAST(t AS HUGEINT) * cf * df) * 1000)
-        |    // SUM(CAST(cf AS HUGEINT) * df) AS BIGINT) AS duration_milli
-        |FROM c GROUP BY 1 ORDER BY coupon_pct""".stripMargin,
-
-    "agg_binomial_option" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS key, CAST(o_orderkey % 5 AS INT) AS cls,
-        |    ${duckMd5Bits("op", "o_orderkey", 6)} % 5000 + 8000 AS spot
-        |  FROM orders),
-        |x AS (
-        |  SELECT key, cls, spot, spot + (cls - 2) * 2000 AS strike,
-        |    CAST(j.range AS INT) AS k,
-        |    [1, 12, 66, 220, 495, 792, 924, 792, 495, 220, 66, 12, 1][CAST(j.range AS INT) + 1] AS coef
-        |  FROM t CROSS JOIN range(0, 13) j),
-        |p AS (
-        |  SELECT cls, key, coef,
-        |    GREATEST(CAST(spot AS HUGEINT) * CAST(power(11, k) AS HUGEINT) * CAST(power(9, 12 - k) AS HUGEINT)
-        |      - CAST(strike AS HUGEINT) * 1000000000000, CAST(0 AS HUGEINT)) AS payoff_num
-        |  FROM x)
-        |SELECT cls, CAST(COUNT(DISTINCT key) AS BIGINT) AS n_options,
-        |  CAST(SUM(coef * payoff_num) // (4096 * CAST(1000000000000 AS HUGEINT)) AS BIGINT) AS value_mass_cents
-        |FROM p GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "agg_chain_ladder" ->
-      s"""WITH pay AS (
-        |  SELECT CAST(o_orderkey % 8 AS INT) AS acc,
-        |    CAST(${duckMd5Bits("cd", "o_orderkey", 6)} % (8 - o_orderkey % 8) AS INT) AS lag,
-        |    ${duckMd5Bits("cp", "o_orderkey", 6)} % 100000 + 1000 AS cents
-        |  FROM orders),
-        |incr AS (SELECT acc, lag, CAST(SUM(cents) AS BIGINT) AS inc FROM pay GROUP BY 1, 2),
-        |cum AS (SELECT acc, lag,
-        |    CAST(SUM(inc) OVER (PARTITION BY acc ORDER BY lag) AS BIGINT) AS c
-        |  FROM incr),
-        |paired AS (
-        |  SELECT a.lag, a.c, b.c AS c_next
-        |  FROM cum a JOIN cum b ON b.acc = a.acc AND b.lag = a.lag + 1),
-        |factors AS (
-        |  SELECT lag, CAST(COUNT(*) AS BIGINT) AS n_cells,
-        |    CAST(SUM(c) AS BIGINT) AS mass_j, CAST(SUM(c_next) AS BIGINT) AS mass_j1
-        |  FROM paired GROUP BY 1),
-        |latest AS (
-        |  SELECT acc, lag AS latest_lag, c AS latest FROM (
-        |    SELECT acc, lag, c, ROW_NUMBER() OVER (PARTITION BY acc ORDER BY lag DESC) AS rn
-        |    FROM cum) q WHERE rn = 1)
-        |SELECT kind, idx, v1, v2, v3 FROM (
-        |  SELECT 'factor' AS kind, CAST(lag AS BIGINT) AS idx, mass_j AS v1, mass_j1 AS v2,
-        |    CAST((mass_j1 * 1000) // mass_j AS BIGINT) AS v3
-        |  FROM factors
-        |  UNION ALL
-        |  SELECT 'accident', CAST(l.acc AS BIGINT), l.latest,
-        |    CAST((CAST(l.latest AS HUGEINT) * f.mass_j1) // f.mass_j AS BIGINT),
-        |    CAST(NULL AS BIGINT)
-        |  FROM latest l LEFT JOIN factors f ON f.lag = l.latest_lag
-        |) ORDER BY kind, idx""".stripMargin,
-
-    "agg_bonus_malus" -> {
-      val steps = (1 to 6).map { yr =>
-        s"""y$yr AS (SELECT k, cohort,
-           |    CASE WHEN claim THEN GREATEST(lvl - 2, 0) ELSE LEAST(lvl + 1, 5) END AS lvl,
-           |    n_claims + CASE WHEN claim THEN 1 ELSE 0 END AS n_claims
-           |  FROM (SELECT y${yr - 1}.*,
-           |      ${duckMd5Bits(s"bm$yr", "k", 6)} % 100
-           |        < CASE WHEN cohort = 2 THEN 40 ELSE 20 END AS claim
-           |    FROM y${yr - 1}) q)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH y0 AS (SELECT CAST(c_custkey AS BIGINT) AS k,
-         |    CAST(c_custkey % 4 AS INT) AS cohort,
-         |    CAST(5 AS BIGINT) AS lvl, CAST(0 AS BIGINT) AS n_claims FROM customer),
-         |$steps
-         |SELECT cohort, lvl, CAST(COUNT(*) AS BIGINT) AS n_drivers,
-         |  CAST(SUM(n_claims) AS BIGINT) AS claim_mass,
-         |  CAST(SUM((10000 * [150, 130, 115, 100, 90, 80][CAST(lvl + 1 AS INT)]) // 100) AS BIGINT) AS premium_mass
-         |FROM y6 GROUP BY 1, 2 ORDER BY cohort, lvl""".stripMargin
-    },
-
-    "agg_credibility_buhlmann" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey % 8 AS INT) AS cls,
-        |    (${duckMd5Bits("cb", "o_orderkey", 6)} % 50000 + 1000)
-        |      * CASE WHEN o_orderkey % 8 = 4 THEN 2 ELSE 1 END AS cents
-        |  FROM orders),
-        |coll AS (SELECT CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS coll_mean_milli FROM t),
-        |m AS (SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_claims,
-        |    CAST(SUM(cents) AS BIGINT) AS ind_mass FROM t GROUP BY 1)
-        |SELECT cls, n_claims, ind_mass, coll.coll_mean_milli,
-        |  CAST((n_claims * 1000000) // (n_claims + 40) AS BIGINT) AS z_ppm,
-        |  CAST((ind_mass * 1000 + 40 * coll_mean_milli) // (n_claims + 40) AS BIGINT) AS premium_milli
-        |FROM m CROSS JOIN coll ORDER BY cls""".stripMargin,
-
-    "fn_age_gate" ->
-      """WITH t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    1950 + CAST(c_custkey AS BIGINT) % 76 AS by,
-        |    CAST(c_custkey AS BIGINT) % 12 + 1 AS bm,
-        |    CAST(c_custkey AS BIGINT) % 28 + 1 AS bd
-        |  FROM customer),
-        |a AS (SELECT (20260816 - (by * 10000 + bm * 100 + bd)) // 10000 AS age FROM t),
-        |c AS (SELECT age,
-        |    CASE WHEN age < 13 THEN '1_child' WHEN age < 16 THEN '2_consent_age'
-        |      WHEN age < 18 THEN '3_minor' ELSE '4_adult' END AS cls
-        |  FROM a)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_persons,
-        |  CAST(SUM(age) AS BIGINT) AS age_mass,
-        |  CAST(MIN(age) AS BIGINT) AS min_age, CAST(MAX(age) AS BIGINT) AS max_age,
-        |  cls <> '4_adult' AS consent_required
-        |FROM c GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "fn_dob_transpose_check" ->
-      """WITH t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    1960 + CAST(c_custkey AS BIGINT) % 50 AS y,
-        |    CAST(c_custkey AS BIGINT) % 12 + 1 AS m,
-        |    CAST(c_custkey AS BIGINT) % 28 + 1 AS dd
-        |  FROM customer),
-        |x AS (
-        |  SELECT y * 10000 + m * 100 + dd AS a_date,
-        |    CASE WHEN dd <= 12 THEN y * 10000 + dd * 100 + m
-        |      ELSE y * 10000 + m * 100 + dd END AS b_date,
-        |    CASE WHEN dd > 12 THEN 'unambiguous'
-        |      WHEN dd = m THEN 'ambiguous_consistent'
-        |      ELSE 'ambiguous_divergent' END AS cls
-        |  FROM t),
-        |r AS (SELECT cls, a_date, b_date,
-        |    (b_date // 10000) * 10000 + (b_date % 100) * 100 + (b_date % 10000) // 100 AS b_swapback
-        |  FROM x)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_records,
-        |  CAST(SUM(CASE WHEN a_date = b_date THEN 1 ELSE 0 END) AS BIGINT) AS n_match_raw,
-        |  CAST(SUM(CASE WHEN a_date = b_swapback OR a_date = b_date THEN 1 ELSE 0 END) AS BIGINT) AS n_match_after_swap
-        |FROM r GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "agg_round_number_bias" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_custkey % 5 AS INT) AS cohort,
-        |    ${duckMd5Bits("rn", "o_orderkey", 8)} AS g
-        |  FROM orders),
-        |c AS (
-        |  SELECT cohort,
-        |    CASE WHEN cohort = 3 AND g % 10 < 4 THEN (g % 150 + 1) * 10000
-        |      ELSE g % 1500000 + 1 END AS cents
-        |  FROM t)
-        |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_txns,
-        |  CAST(SUM(CASE WHEN cents % 100 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_r100,
-        |  CAST(SUM(CASE WHEN cents % 1000 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_r1000,
-        |  CAST(SUM(CASE WHEN cents % 10000 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_r10000,
-        |  CAST((SUM(CASE WHEN cents % 10000 = 0 THEN 1 ELSE 0 END) * 1000000)
-        |    // COUNT(*) AS BIGINT) AS r10000_ppm
-        |FROM c GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "win_control_chart" ->
-      s"""WITH base AS (
-        |  SELECT CAST(s_suppkey AS BIGINT) AS m, CAST(i.range AS INT) AS i,
-        |    CAST(s_suppkey % 7 AS INT) AS cls,
-        |    500 + (${duckMd5Bits("'cc:' || CAST(s_suppkey AS VARCHAR) || ':' || CAST(i.range AS VARCHAR)", 6)} % 41) - 20
-        |      + CASE WHEN s_suppkey % 7 = 2 AND i.range >= 30 THEN 80 ELSE 0 END
-        |      + CASE WHEN s_suppkey % 7 = 5 AND i.range >= 20 THEN 14 ELSE 0 END AS x
-        |  FROM supplier CROSS JOIN range(0, 48) i),
-        |mr AS (SELECT m, i, cls, x,
-        |    abs(x - lag(x) OVER (PARTITION BY m ORDER BY i)) AS mr
-        |  FROM base),
-        |bl AS (SELECT m, CAST((SUM(x) * 1000) // 16 AS BIGINT) AS center_milli,
-        |    CAST((SUM(CASE WHEN i >= 1 THEN mr ELSE 0 END) * 1000) // 15 AS BIGINT) AS mrbar_milli
-        |  FROM mr WHERE i < 16 GROUP BY 1),
-        |mk AS (
-        |  SELECT b.m, b.cls, b.i,
-        |    b.i >= 16 AND abs(b.x * 1000 - bl.center_milli) * 1128 > bl.mrbar_milli * 3000 AS rule1,
-        |    CASE WHEN b.x * 1000 > bl.center_milli THEN 1 ELSE 0 END AS above
-        |  FROM base b JOIN bl ON bl.m = b.m),
-        |r2 AS (SELECT m, cls, i, rule1,
-        |    SUM(above) OVER (PARTITION BY m ORDER BY i
-        |      ROWS BETWEEN 8 PRECEDING AND CURRENT ROW) AS run9
-        |  FROM mk),
-        |pm AS (SELECT m, cls,
-        |    CAST(SUM(CASE WHEN rule1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rule1,
-        |    CAST(SUM(CASE WHEN i >= 24 AND (run9 = 9 OR run9 = 0) THEN 1 ELSE 0 END) AS BIGINT) AS n_rule2
-        |  FROM r2 GROUP BY 1, 2)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_machines,
-        |  CAST(SUM(n_rule1) AS BIGINT) AS rule1_mass,
-        |  CAST(SUM(n_rule2) AS BIGINT) AS rule2_mass,
-        |  CAST(SUM(CASE WHEN n_rule1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS machines_rule1,
-        |  CAST(SUM(CASE WHEN n_rule2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS machines_rule2
-        |FROM pm GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "fn_honorific_strip" ->
-      """WITH t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    'PERSON ' || lpad(CAST(c_custkey % 997 AS VARCHAR), 4, '0') AS canon,
-        |    CAST(c_custkey % 4 AS INT) AS p, CAST((c_custkey // 4) % 4 AS INT) AS q
-        |  FROM customer),
-        |r AS (SELECT k, canon, p, q,
-        |    ['DR ','MR ','MS ','PROF '][p + 1] || canon || [' JR',' SR',' III',''][q + 1] AS raw
-        |  FROM t),
-        |x AS (SELECT p, q, canon, raw,
-        |    regexp_replace(regexp_replace(raw, '^(DR|MR|MS|PROF) ', ''), ' (JR|SR|III)$', '') AS stripped
-        |  FROM r)
-        |SELECT p, q, CAST(COUNT(*) AS BIGINT) AS n_records,
-        |  CAST(SUM(CASE WHEN stripped = canon THEN 1 ELSE 0 END) AS BIGINT) AS n_recovered,
-        |  CAST(SUM(len(raw) - len(stripped)) AS BIGINT) AS chars_stripped
-        |FROM x GROUP BY 1, 2 ORDER BY p, q""".stripMargin,
-
-    "warehouse_deceased_suppression" ->
-      """WITH p AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer)
-        |SELECT k % 4 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_persons,
-        |  CAST(SUM(CASE WHEN k % 23 = 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_deceased,
-        |  CAST(SUM(CASE WHEN k % 17 = 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_goneaway,
-        |  CAST(SUM(CASE WHEN k % 23 = 6 AND k % 17 = 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-        |  CAST(SUM(CASE WHEN k % 23 <> 6 AND k % 17 <> 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_mailable
-        |FROM p GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    // Sample grouping + payload byte conservation vs the relational slice.
-    "source_webdataset_shard" ->
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_samples,
-        |  CAST(COUNT(*) * 2 AS BIGINT) AS n_members,
-        |  CAST(SUM(strlen(text)) AS BIGINT) AS txt_byte_mass,
-        |  MIN('sample_' || lpad(CAST(doc_id AS VARCHAR), 8, '0')) AS first_key
-        |FROM documents WHERE doc_id % 5 = 0 GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "source_zip_shard" ->
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_members,
-        |  CAST(SUM(strlen(text)) AS BIGINT) AS byte_mass
-        |FROM documents WHERE doc_id % 4 = 1 GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "source_sequencefile_roundtrip" ->
-      """SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-        |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-        |FROM orders WHERE o_orderkey % 13 = 0 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "graph_louvain_pass" -> {
-      s"""WITH ${GraphOps.louvainOracleCtes},
-         |deg AS (SELECT n, CAST(SUM(w) AS BIGINT) AS k FROM (
-         |  SELECT a AS n, w FROM hw UNION ALL SELECT b AS n, w FROM hw) q GROUP BY 1),
-         |m2 AS (SELECT CAST(SUM(k) AS BIGINT) AS m2 FROM deg),
-         |dirx AS (SELECT a AS i, b AS j, w FROM hw UNION ALL SELECT b AS i, a AS j, w FROM hw),
-         |ad AS (
-         |  SELECT i, CASE WHEN gain2m > 0 THEN j ELSE i END AS comm,
-         |    CASE WHEN gain2m > 0 THEN gain2m ELSE 0 END AS gain
-         |  FROM (
-         |    SELECT d.i, d.j, m2.m2 * d.w - ki.k * kj.k AS gain2m,
-         |      ROW_NUMBER() OVER (PARTITION BY d.i
-         |        ORDER BY m2.m2 * d.w - ki.k * kj.k DESC, d.j) AS rn
-         |    FROM dirx d JOIN deg ki ON ki.n = d.i JOIN deg kj ON kj.n = d.j
-         |    CROSS JOIN m2) q
-         |  WHERE rn = 1),
-         |internal AS (
-         |  SELECT ma.comm AS comm, CAST(SUM(hw.w) AS BIGINT) AS internal_w
-         |  FROM hw JOIN ad ma ON ma.i = hw.a JOIN ad mb ON mb.i = hw.b
-         |  WHERE ma.comm = mb.comm GROUP BY 1)
-         |SELECT ad.comm, CAST(COUNT(*) AS BIGINT) AS n_members,
-         |  CAST(SUM(ad.gain) AS BIGINT) AS gain_mass,
-         |  CAST(coalesce(MAX(i2.internal_w), 0) AS BIGINT) AS internal_w
-         |FROM ad LEFT JOIN internal i2 ON i2.comm = ad.comm
-         |GROUP BY 1 ORDER BY ad.comm""".stripMargin
-    },
-
-    "agg_dbscan_grid" ->
-      s"""WITH pts AS (
-        |  SELECT CASE WHEN ${duckMd5Bits("db", "o_orderkey", 6)} % 10 < 7
-        |    THEN 10000 + (${duckMd5Bits("dc", "o_orderkey", 6)} % 3) * 40000
-        |       + ${duckMd5Bits("dx", "o_orderkey", 6)} % 501
-        |    ELSE ${duckMd5Bits("du", "o_orderkey", 6)} % 100000
-        |  END AS x
-        |  FROM orders),
-        |b0 AS (SELECT x // 400 AS b FROM pts),
-        |nt AS (SELECT GREATEST(1, COUNT(*) // 100) AS minpts FROM b0),
-        |bc AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cnt FROM b0 GROUP BY 1),
-        |nb AS (
-        |  SELECT c.b, c.cnt,
-        |    c.cnt + coalesce(l.cnt, 0) + coalesce(r.cnt, 0) AS hood
-        |  FROM bc c LEFT JOIN bc l ON l.b = c.b - 1 LEFT JOIN bc r ON r.b = c.b + 1),
-        |nc AS (SELECT nb.*, hood >= (SELECT minpts FROM nt) AS core FROM nb),
-        |isl AS (
-        |  SELECT b, cnt, b - ROW_NUMBER() OVER (ORDER BY b) AS grp
-        |  FROM nc WHERE core),
-        |coreb AS (SELECT b, cnt, MIN(b) OVER (PARTITION BY grp) AS cluster FROM isl),
-        |bord AS (
-        |  SELECT n.b, n.cnt, LEAST(cu.cluster, cd.cluster) AS cluster
-        |  FROM nc n LEFT JOIN coreb cu ON cu.b = n.b - 1
-        |  LEFT JOIN coreb cd ON cd.b = n.b + 1
-        |  WHERE NOT n.core),
-        |cl AS (
-        |  SELECT cluster, CAST(SUM(cnt) AS BIGINT) AS n_core_points,
-        |    CAST(COUNT(*) AS BIGINT) AS n_buckets
-        |  FROM coreb GROUP BY 1),
-        |bd AS (SELECT cluster, CAST(SUM(cnt) AS BIGINT) AS n_border_points
-        |  FROM bord WHERE cluster IS NOT NULL GROUP BY 1),
-        |nz AS (SELECT CAST(coalesce(SUM(cnt), 0) AS BIGINT) AS n_border_points,
-        |    CAST(COUNT(*) AS BIGINT) AS n_buckets FROM bord WHERE cluster IS NULL)
-        |SELECT * FROM (
-        |  SELECT cl.cluster, cl.n_core_points,
-        |    CAST(coalesce(bd.n_border_points, 0) AS BIGINT) AS n_border_points,
-        |    cl.n_buckets
-        |  FROM cl LEFT JOIN bd ON bd.cluster = cl.cluster
-        |  UNION ALL
-        |  SELECT CAST(-1 AS BIGINT), CAST(0 AS BIGINT), n_border_points, n_buckets FROM nz
-        |) ORDER BY cluster""".stripMargin,
-
-    "fn_iban_mod97" ->
-      s"""WITH t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    (CAST(c_custkey AS BIGINT) * 7919 + 13) % 1000000000 AS hi,
-        |    ${duckMd5Bits("ib", "c_custkey", 8)} % 1000000000 AS lo
-        |  FROM customer),
-        |c AS (
-        |  SELECT k, hi, lo, k % 9 = 4 AS corrupted,
-        |    98 - (((hi % 97) * 34 + lo) % 97 * 27 + 131400) % 97 AS chk
-        |  FROM t),
-        |v AS (
-        |  SELECT k, corrupted,
-        |    (((hi % 97) * 34 + CASE WHEN corrupted THEN
-        |        CASE WHEN lo % 10 < 9 THEN lo + 1 ELSE lo - 1 END
-        |      ELSE lo END) % 97 * 27 + 131400 + chk) % 97 = 1 AS valid
-        |  FROM c)
-        |SELECT k % 5 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_ibans,
-        |  CAST(SUM(CASE WHEN valid THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-        |  CAST(SUM(CASE WHEN NOT valid THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
-        |  CAST(SUM(CASE WHEN corrupted THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
-        |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "fn_keyboard_typo_model" ->
-      s"""WITH adj(orig, adjc) AS (VALUES
-        |  ('M','N'), ('M','K'), ('C','X'), ('C','V'), ('O','I'), ('O','P'),
-        |  ('E','W'), ('E','R'), ('A','S'), ('A','Q'), ('R','E'), ('R','T')),
-        |fa AS (SELECT orig, MIN(adjc) AS a0, MAX(adjc) AS a1 FROM adj GROUP BY 1),
-        |t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    ['SMITH','SMYTH','SCHMIDT','JOHNSON','JONSON','MEYER','MAYER',
-        |     'BROWN','BRAUN','TAYLOR','WALKER','HARRIS'][CAST(c_custkey % 12 AS INT) + 1] AS name0
-        |  FROM customer),
-        |o AS (
-        |  SELECT k, substring(name0, 2, 1) AS c2, k % 7 = 3 AS typo,
-        |    CASE WHEN k % 7 <> 3 THEN substring(name0, 2, 1)
-        |      WHEN ${duckMd5Bits("kb", "k", 6)} % 100 < 85
-        |        THEN CASE WHEN ${duckMd5Bits("ka", "k", 6)} % 2 = 0
-        |          THEN fa.a0 ELSE fa.a1 END
-        |      ELSE 'q' END AS oc
-        |  FROM t JOIN fa ON fa.orig = substring(t.name0, 2, 1)),
-        |c AS (
-        |  SELECT o.k, o.typo, a.adjc IS NOT NULL AS is_adjacent
-        |  FROM o LEFT JOIN adj a ON a.orig = o.c2 AND a.adjc = o.oc)
-        |SELECT k % 4 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_records,
-        |  CAST(SUM(CASE WHEN typo THEN 1 ELSE 0 END) AS BIGINT) AS n_typos,
-        |  CAST(SUM(CASE WHEN typo AND is_adjacent THEN 1 ELSE 0 END) AS BIGINT) AS n_adjacent,
-        |  CAST((SUM(CASE WHEN typo AND is_adjacent THEN 1 ELSE 0 END) * 1000000)
-        |    // NULLIF(SUM(CASE WHEN typo THEN 1 ELSE 0 END), 0) AS BIGINT) AS adjacent_ppm
-        |FROM c GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "fn_ocr_confusion" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    'REF' || lpad(CAST(o_orderkey % 1000000 AS VARCHAR), 6, '0') AS ref,
-        |    o_orderkey % 6 = 2 AS corrupt,
-        |    ${duckMd5Bits("oc", "o_orderkey", 6)} % 4 AS cls
-        |  FROM orders),
-        |o AS (
-        |  SELECT k, ref, corrupt, cls,
-        |    CASE WHEN NOT corrupt THEN ref
-        |      WHEN cls = 0 THEN translate(ref, '0', 'O')
-        |      WHEN cls = 1 THEN translate(ref, '1', 'I')
-        |      WHEN cls = 2 THEN translate(ref, '5', 'S')
-        |      ELSE translate(ref, '8', 'B') END AS seen
-        |  FROM t),
-        |r AS (SELECT *, translate(seen, 'OISB', '0158') AS repaired FROM o)
-        |SELECT CASE WHEN corrupt THEN cls ELSE -1 END AS cls,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN seen <> ref THEN 1 ELSE 0 END) AS BIGINT) AS n_visibly_corrupted,
-        |  CAST(SUM(CASE WHEN repaired = ref THEN 1 ELSE 0 END) AS BIGINT) AS n_repaired_exact
-        |FROM r GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "agg_flesch_reading" ->
-      """WITH t AS (
-        |  SELECT lang, CAST(len(string_split(text, ' ')) AS BIGINT) AS w,
-        |    CAST(len(regexp_extract_all(text, '[.!?]')) + 1 AS BIGINT) AS st,
-        |    greatest(CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT), 1) AS y
-        |  FROM documents),
-        |sc AS (
-        |  SELECT lang, w, st, y,
-        |    206835 - (1015 * w) // st - (84600 * y) // w AS score_milli
-        |  FROM t)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(w) AS BIGINT) AS word_mass,
-        |  CAST(SUM(st) AS BIGINT) AS sentence_mass,
-        |  CAST(SUM(y) AS BIGINT) AS syllable_mass,
-        |  CAST(SUM(score_milli) AS BIGINT) AS score_mass_milli,
-        |  CAST(SUM(CASE WHEN score_milli >= 60000 THEN 1 ELSE 0 END) AS BIGINT) AS n_easy
-        |FROM sc GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "llm_reward_hacking_audit" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k, CAST(o_orderkey % 4 AS INT) AS variant,
-        |    ${duckMd5Bits("cl", "o_orderkey", 6)} % 400 + 100 AS len
-        |  FROM orders),
-        |r AS (SELECT variant, len,
-        |    CASE WHEN variant = 2 THEN 200 + len * 2
-        |      ELSE ${duckMd5Bits("rw", "k", 6)} % 1000 END AS reward_milli
-        |  FROM t),
-        |m AS (
-        |  SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |    CAST(COUNT(*) AS HUGEINT) * SUM(len * reward_milli)
-        |      - CAST(SUM(len) AS HUGEINT) * SUM(reward_milli) AS cov_num,
-        |    CAST(COUNT(*) AS HUGEINT) * SUM(len * len)
-        |      - CAST(SUM(len) AS HUGEINT) * SUM(len) AS var_l,
-        |    CAST(COUNT(*) AS HUGEINT) * SUM(reward_milli * reward_milli)
-        |      - CAST(SUM(reward_milli) AS HUGEINT) * SUM(reward_milli) AS var_r
-        |  FROM r GROUP BY 1)
-        |SELECT variant, n_pairs, CAST(cov_num AS BIGINT) AS cov_num,
-        |  cov_num > 0 AND cov_num * cov_num * 4 > var_l * var_r AS length_gamed
-        |FROM m ORDER BY variant""".stripMargin,
-
-    "llm_context_dedup" ->
-      s"""WITH ret AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS q,
-        |    CASE WHEN j.range < 4
-        |      THEN ${duckMd5Bits("'rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)} % 50
-        |      ELSE 50 + ${duckMd5Bits("'rc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(j.range AS VARCHAR)", 8)} % 100000
-        |    END AS chunk
-        |  FROM orders CROSS JOIN range(0, 12) j),
-        |pc AS (
-        |  SELECT CAST(q % 4 AS INT) AS cohort, chunk, CAST(COUNT(*) AS BIGINT) AS refs
-        |  FROM ret GROUP BY 1, 2),
-        |pt AS (SELECT cohort, refs,
-        |    ${duckMd5Bits("ct", "chunk", 6)} % 200 + 50 AS tok
-        |  FROM pc)
-        |SELECT cohort, CAST(SUM(refs) AS BIGINT) AS n_retrievals,
-        |  CAST(COUNT(*) AS BIGINT) AS n_distinct_chunks,
-        |  CAST(SUM((refs - 1) * tok) AS BIGINT) AS saved_token_mass,
-        |  CAST(((SUM(refs) - COUNT(*)) * 1000000) // SUM(refs) AS BIGINT) AS dup_ppm
-        |FROM pt GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "llm_synthetic_mix_gate" ->
-      s"""WITH t AS (
-        |  SELECT source, CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-        |    ${duckMd5Bits("sy", "doc_id", 6)} % 100
-        |      < CASE WHEN source = 'src2' THEN 80 ELSE 30 END AS synth
-        |  FROM documents)
-        |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CASE WHEN synth THEN 1 ELSE 0 END) AS BIGINT) AS n_synth,
-        |  CAST(SUM(tok) AS BIGINT) AS token_mass,
-        |  CAST(SUM(CASE WHEN synth THEN tok ELSE 0 END) AS BIGINT) AS synth_token_mass,
-        |  CAST((SUM(CASE WHEN synth THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS synth_doc_ppm,
-        |  CAST((SUM(CASE WHEN synth THEN tok ELSE 0 END) * 1000000) // SUM(tok) AS BIGINT) AS synth_token_ppm,
-        |  CAST((SUM(CASE WHEN synth THEN tok ELSE 0 END) * 1000000) // SUM(tok) AS BIGINT) > 500000 AS cap_breached
-        |FROM t GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "service_read_repair" ->
-      s"""WITH t AS (
-        |  SELECT event_id, user_id % 8 AS shard,
-        |    ${duckMd5Bits("vw", "event_id", 6)} % 50 + 10 AS v_latest
-        |  FROM events),
-        |r AS (
-        |  SELECT shard, event_id, v_latest,
-        |    CASE WHEN ${duckMd5Bits("lag0", "event_id", 6)} % 3 = 0
-        |      THEN v_latest - (${duckMd5Bits("gap0", "event_id", 6)} % 5 + 1)
-        |      ELSE v_latest END AS r0,
-        |    CASE WHEN ${duckMd5Bits("lag1", "event_id", 6)} % 4 = 0
-        |      THEN v_latest - (${duckMd5Bits("gap1", "event_id", 6)} % 5 + 1)
-        |      ELSE v_latest END AS r1,
-        |    CASE WHEN ${duckMd5Bits("lag2", "event_id", 6)} % 5 = 0
-        |      THEN v_latest - (${duckMd5Bits("gap2", "event_id", 6)} % 5 + 1)
-        |      ELSE v_latest END AS r2,
-        |    ${duckMd5Bits("pk", "event_id", 6)} % 3 AS pick
-        |  FROM t),
-        |p AS (SELECT shard,
-        |    CASE WHEN pick = 0 THEN r1 ELSE r0 END AS va,
-        |    CASE WHEN pick = 2 THEN r1 ELSE r2 END AS vb
-        |  FROM r)
-        |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_reads,
-        |  CAST(SUM(CASE WHEN va <> vb THEN 1 ELSE 0 END) AS BIGINT) AS n_divergent,
-        |  CAST(SUM(abs(va - vb)) AS BIGINT) AS repair_gap_mass,
-        |  CAST(SUM(greatest(va, vb)) AS BIGINT) AS resolved_version_mass,
-        |  CAST((SUM(CASE WHEN va <> vb THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS divergent_ppm
-        |FROM p GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    "fn_merkle_antientropy" ->
-      s"""WITH ks AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    ${duckMd5Bits("mk", "o_orderkey", 8)} % 64 AS leaf,
-        |    ${duckMd5Bits("mv", "o_orderkey", 6)} AS va
-        |  FROM orders),
-        |kv AS (SELECT k, leaf, va, CASE WHEN k % 16 = 9 THEN va + 1 ELSE va END AS vb FROM ks),
-        |kh AS (SELECT leaf,
-        |    ${duckMd5Bits("'mh:' || CAST(k AS VARCHAR) || ':' || CAST(va AS VARCHAR)", 12)} % 1099511627776 AS ha,
-        |    ${duckMd5Bits("'mh:' || CAST(k AS VARCHAR) || ':' || CAST(vb AS VARCHAR)", 12)} % 1099511627776 AS hb
-        |  FROM kv),
-        |leaves AS (SELECT leaf, CAST(SUM(ha) % 1099511627776 AS BIGINT) AS da,
-        |    CAST(SUM(hb) % 1099511627776 AS BIGINT) AS db,
-        |    CAST(COUNT(*) AS BIGINT) AS n_keys FROM kh GROUP BY 1),
-        |nodes AS (
-        |  SELECT CAST(l.range AS INT) AS level, leaf // (1 << CAST(l.range AS INT)) AS node,
-        |    CAST(SUM(da) % 1099511627776 AS BIGINT) AS da,
-        |    CAST(SUM(db) % 1099511627776 AS BIGINT) AS db
-        |  FROM leaves CROSS JOIN range(0, 7) l GROUP BY 1, 2),
-        |lvlstats AS (
-        |  SELECT level, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-        |    CAST(SUM(CASE WHEN da <> db THEN 1 ELSE 0 END) AS BIGINT) AS n_differing,
-        |    CAST(NULL AS BIGINT) AS n_keys_transferred,
-        |    CAST(NULL AS BIGINT) AS n_keys_total
-        |  FROM nodes GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT * FROM lvlstats
-        |  UNION ALL
-        |  SELECT 99 AS level, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-        |    CAST(SUM(CASE WHEN da <> db THEN n_keys ELSE 0 END) AS BIGINT),
-        |    CAST(SUM(n_keys) AS BIGINT)
-        |  FROM leaves
-        |) ORDER BY level""".stripMargin,
-
-    "agg_crdt_counter" ->
-      s"""WITH ev AS (
-        |  SELECT user_id % 7 AS key, CAST(event_id % 3 AS INT) AS node,
-        |    ${duckMd5Bits("pn", "event_id", 6)} % 4 <> 0 AS isp,
-        |    (event_id % 3 = 0) OR (${duckMd5Bits("sv0", "event_id", 6)} % 10 < 7) AS s0,
-        |    (event_id % 3 = 1) OR (${duckMd5Bits("sv1", "event_id", 6)} % 10 < 7) AS s1,
-        |    (event_id % 3 = 2) OR (${duckMd5Bits("sv2", "event_id", 6)} % 10 < 7) AS s2
-        |  FROM events),
-        |pn AS (
-        |  SELECT key, node,
-        |    CAST(SUM(CASE WHEN isp THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        |    CAST(SUM(CASE WHEN NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS tn,
-        |    CAST(SUM(CASE WHEN s0 AND isp THEN 1 ELSE 0 END) AS BIGINT) AS p0,
-        |    CAST(SUM(CASE WHEN s0 AND NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(SUM(CASE WHEN s1 AND isp THEN 1 ELSE 0 END) AS BIGINT) AS p1,
-        |    CAST(SUM(CASE WHEN s1 AND NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(SUM(CASE WHEN s2 AND isp THEN 1 ELSE 0 END) AS BIGINT) AS p2,
-        |    CAST(SUM(CASE WHEN s2 AND NOT isp THEN 1 ELSE 0 END) AS BIGINT) AS n2
-        |  FROM ev GROUP BY 1, 2)
-        |SELECT key,
-        |  CAST(SUM(p0 - n0) AS BIGINT) AS view0_value,
-        |  CAST(SUM(p1 - n1) AS BIGINT) AS view1_value,
-        |  CAST(SUM(p2 - n2) AS BIGINT) AS view2_value,
-        |  CAST(SUM(greatest(p0, p1, p2) - greatest(n0, n1, n2)) AS BIGINT) AS merged_value,
-        |  CAST(SUM(tp - tn) AS BIGINT) AS true_value,
-        |  CAST(SUM(greatest(p0, p1, p2) - greatest(n0, n1, n2)) AS BIGINT)
-        |    = CAST(SUM(tp - tn) AS BIGINT) AS converged
-        |FROM pn GROUP BY 1 ORDER BY key""".stripMargin,
-
-    "service_sliding_window_limit" ->
-      """WITH req AS (
-        |  SELECT CASE WHEN event_id % 3 = 0 THEN (user_id // 5) * 5 ELSE user_id END AS principal,
-        |    event_id % 24 AS w
-        |  FROM events),
-        |cnt AS (SELECT principal, w, CAST(COUNT(*) AS BIGINT) AS cur FROM req GROUP BY 1, 2),
-        |est AS (
-        |  SELECT c.principal, c.w, c.cur,
-        |    coalesce(p.cur, 0) * 500 + c.cur * 1000 AS est_milli
-        |  FROM cnt c LEFT JOIN cnt p ON p.principal = c.principal AND p.w = c.w - 1)
-        |SELECT principal % 5 AS cohort, CAST(COUNT(*) AS BIGINT) AS n_windows,
-        |  CAST(SUM(CASE WHEN est_milli > 8000 THEN 1 ELSE 0 END) AS BIGINT) AS n_over,
-        |  CAST(SUM(cur) AS BIGINT) AS n_requests,
-        |  CAST(SUM(est_milli) AS BIGINT) AS est_mass_milli,
-        |  CAST((SUM(CASE WHEN est_milli > 8000 THEN 1 ELSE 0 END) * 1000000)
-        |    // COUNT(*) AS BIGINT) AS over_ppm
-        |FROM est GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "service_retry_budget" ->
-      s"""WITH t AS (
-        |  SELECT user_id % 4 AS svc,
-        |    ${duckMd5Bits("rf", "event_id", 6)} % 100
-        |      < CASE WHEN user_id % 4 = 2 THEN 35 ELSE 15 END AS failed
-        |  FROM events),
-        |m AS (SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_requests,
-        |    CAST(SUM(CASE WHEN failed THEN 1 ELSE 0 END) AS BIGINT) AS n_failures
-        |  FROM t GROUP BY 1)
-        |SELECT svc, n_requests, n_failures,
-        |  (n_requests * 20) // 100 AS budget,
-        |  least(n_failures, (n_requests * 20) // 100) AS retries_granted,
-        |  n_failures - least(n_failures, (n_requests * 20) // 100) AS refused,
-        |  CAST((least(n_failures, (n_requests * 20) // 100) * 1000000)
-        |    // NULLIF((n_requests * 20) // 100, 0) AS BIGINT) AS budget_util_ppm
-        |FROM m ORDER BY svc""".stripMargin,
-
-    "agg_apdex" ->
-      s"""WITH t AS (
-        |  SELECT user_id % 4 AS svc,
-        |    ${duckMd5Bits("ap", "event_id", 6)} % 2000
-        |      + CASE WHEN user_id % 4 = 3 THEN 800 ELSE 0 END AS lat_ms
-        |  FROM events)
-        |SELECT svc, CAST(COUNT(*) AS BIGINT) AS n_requests,
-        |  CAST(SUM(CASE WHEN lat_ms <= 300 THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
-        |  CAST(SUM(CASE WHEN lat_ms > 300 AND lat_ms <= 1200 THEN 1 ELSE 0 END) AS BIGINT) AS n_tolerating,
-        |  CAST(SUM(CASE WHEN lat_ms > 1200 THEN 1 ELSE 0 END) AS BIGINT) AS n_frustrated,
-        |  CAST((SUM(CASE WHEN lat_ms <= 300 THEN 1 ELSE 0 END) * 1000
-        |    + SUM(CASE WHEN lat_ms > 300 AND lat_ms <= 1200 THEN 1 ELSE 0 END) * 500)
-        |    // COUNT(*) AS BIGINT) AS apdex_milli
-        |FROM t GROUP BY 1 ORDER BY svc""".stripMargin,
-
-    "agg_interrupted_ts" ->
-      s"""WITH e AS (
-        |  SELECT event_id % 48 AS b, CAST(user_id % 3 AS INT) AS cohort,
-        |    10000 + (event_id % 48) * 200
-        |      + CASE WHEN event_id % 48 >= 24 THEN 5000 + (event_id % 48 - 24) * 300 ELSE 0 END
-        |      + ${duckMd5Bits("n", "event_id", 6)} % 200 AS cents
-        |  FROM events),
-        |bk AS (
-        |  SELECT cohort, b, CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS y
-        |  FROM e GROUP BY 1, 2),
-        |seg AS (SELECT cohort, CASE WHEN b < 24 THEN 'pre' ELSE 'post' END AS segment, b, y FROM bk)
-        |SELECT cohort, segment, CAST(COUNT(*) AS BIGINT) AS n_buckets,
-        |  CAST(SUM(y) // COUNT(*) AS BIGINT) AS y_mean_milli,
-        |  CAST((CAST(COUNT(*) AS HUGEINT) * SUM(b * y) - CAST(SUM(b) AS HUGEINT) * SUM(y)) * 1000000
-        |    // (CAST(COUNT(*) AS HUGEINT) * SUM(b * b) - CAST(SUM(b) AS HUGEINT) * SUM(b)) AS BIGINT) AS slope_micro
-        |FROM seg GROUP BY 1, 2 ORDER BY cohort, segment""".stripMargin,
-
-    "agg_synthetic_control" ->
-      s"""WITH e AS (
-        |  SELECT user_id % 8 AS unit, event_id % 24 AS b,
-        |    10000 + (event_id % 24) * 100
-        |      + ${duckMd5Bits("lv", "user_id % 8", 6)} % 2000
-        |      + CASE WHEN user_id % 8 = 0 AND event_id % 24 >= 12 THEN 4000 ELSE 0 END
-        |      + ${duckMd5Bits("sc", "event_id", 6)} % 200 AS cents
-        |  FROM events),
-        |bu AS (SELECT unit, b, CAST((SUM(cents) * 1000) // COUNT(*) AS BIGINT) AS y
-        |  FROM e GROUP BY 1, 2),
-        |tr AS (SELECT b, y AS y0 FROM bu WHERE unit = 0),
-        |dn AS (
-        |  SELECT d.unit,
-        |    CAST(SUM(CASE WHEN d.b < 12 THEN abs(d.y - t.y0) ELSE 0 END) AS BIGINT) AS pre_l1_mass,
-        |    CAST(SUM(CASE WHEN d.b < 12 THEN t.y0 - d.y ELSE 0 END) AS BIGINT) AS pre_gap_mass,
-        |    CAST(SUM(CASE WHEN d.b >= 12 THEN t.y0 - d.y ELSE 0 END) AS BIGINT) AS post_gap_mass
-        |  FROM bu d JOIN tr t ON t.b = d.b WHERE d.unit <> 0 GROUP BY 1),
-        |rk AS (
-        |  SELECT unit, pre_l1_mass, pre_gap_mass, post_gap_mass,
-        |    ROW_NUMBER() OVER (ORDER BY pre_l1_mass, unit) AS r
-        |  FROM dn)
-        |SELECT unit, pre_l1_mass, r = 1 AS selected,
-        |  CASE WHEN r = 1 THEN post_gap_mass - pre_gap_mass END AS att_mass
-        |FROM rk ORDER BY unit""".stripMargin,
-
-    "agg_uplift_twomodel" ->
-      s"""WITH t AS (
-        |  SELECT CAST(c_custkey % 4 AS INT) AS segment,
-        |    ${duckMd5Bits("tr", "c_custkey", 6)} % 2 = 1 AS treated,
-        |    ${duckMd5Bits("fl", "c_custkey", 6)} % 10 = 0 AS flip
-        |  FROM customer),
-        |r AS (
-        |  SELECT segment, treated,
-        |    (CASE segment WHEN 0 THEN TRUE WHEN 1 THEN treated
-        |      WHEN 2 THEN FALSE ELSE NOT treated END) <> flip AS resp
-        |  FROM t),
-        |m AS (
-        |  SELECT segment,
-        |    CAST(SUM(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT) AS n_treated,
-        |    CAST(SUM(CASE WHEN NOT treated THEN 1 ELSE 0 END) AS BIGINT) AS n_control,
-        |    CAST(SUM(CASE WHEN treated AND resp THEN 1 ELSE 0 END) AS BIGINT) AS resp_t,
-        |    CAST(SUM(CASE WHEN NOT treated AND resp THEN 1 ELSE 0 END) AS BIGINT) AS resp_c
-        |  FROM r GROUP BY 1)
-        |SELECT segment, n_treated, n_control, resp_t, resp_c,
-        |  (resp_t * 1000000) // NULLIF(n_treated, 0)
-        |    - (resp_c * 1000000) // NULLIF(n_control, 0) AS uplift_ppm
-        |FROM m ORDER BY segment""".stripMargin,
-
-    "agg_count_min" ->
-      s"""WITH items AS (
-        |  SELECT CASE WHEN event_id % 3 < 2 THEN 'hh' || CAST(event_id % 5 AS VARCHAR)
-        |    WHEN event_id % 997 = 5 THEN 'rare'
-        |    ELSE 'k' || CAST(${duckMd5Bits("ck", "event_id", 6)} % 5000 AS VARCHAR)
-        |  END AS key
-        |  FROM events),
-        |sketch AS (
-        |  SELECT i.range AS i,
-        |    ${duckMd5Bits("'cm' || CAST(i.range AS VARCHAR) || ':' || key", 8)} % 256 AS slot,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM items CROSS JOIN range(0, 4) i GROUP BY 1, 2),
-        |probes AS (
-        |  SELECT key, i.range AS i,
-        |    ${duckMd5Bits("'cm' || CAST(i.range AS VARCHAR) || ':' || key", 8)} % 256 AS slot
-        |  FROM (SELECT unnest(['hh0','hh1','hh2','hh3','hh4','rare']) AS key) pk
-        |  CROSS JOIN range(0, 4) i),
-        |est AS (
-        |  SELECT p.key, CAST(MIN(s.cnt) AS BIGINT) AS estimate
-        |  FROM probes p JOIN sketch s ON s.i = p.i AND s.slot = p.slot GROUP BY 1),
-        |tr AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS true_count FROM items GROUP BY 1)
-        |SELECT e.key, t.true_count, e.estimate,
-        |  e.estimate - t.true_count AS overestimate
-        |FROM est e JOIN tr t ON t.key = e.key ORDER BY e.key""".stripMargin,
-
-    "agg_reservoir_sample" ->
-      """WITH sm AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS id
-        |  FROM orders
-        |  ORDER BY md5('rs:' || CAST(o_orderkey AS VARCHAR)), CAST(o_orderkey AS BIGINT)
-        |  LIMIT 100)
-        |SELECT id % 5 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_sampled,
-        |  CAST(SUM(id) AS BIGINT) AS id_mass, CAST(MIN(id) AS BIGINT) AS min_id
-        |FROM sm GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "warehouse_t_closeness" ->
-      s"""WITH t AS (
-        |  SELECT CAST(c_custkey % 8 AS INT) AS qi,
-        |    ${duckMd5Bits("sv", "c_custkey", 6)} AS g
-        |  FROM customer),
-        |x AS (SELECT qi, CASE WHEN qi = 3 AND g % 100 < 70 THEN 0 ELSE g % 5 END AS sv FROM t),
-        |cls AS (SELECT qi, sv, CAST(COUNT(*) AS BIGINT) AS c_cs FROM x GROUP BY 1, 2),
-        |gdist AS (SELECT sv, CAST(COUNT(*) AS BIGINT) AS g_s FROM x GROUP BY 1),
-        |sizes AS (SELECT qi, CAST(SUM(c_cs) AS BIGINT) AS n_c FROM cls GROUP BY 1),
-        |nt AS (SELECT CAST(SUM(g_s) AS BIGINT) AS n_tot FROM gdist),
-        |grid AS (
-        |  SELECT z.qi, z.n_c, gl.sv, gl.g_s, nt.n_tot, coalesce(c.c_cs, 0) AS c_cs
-        |  FROM sizes z CROSS JOIN gdist gl CROSS JOIN nt
-        |  LEFT JOIN cls c ON c.qi = z.qi AND c.sv = gl.sv)
-        |SELECT qi, CAST(MAX(n_c) AS BIGINT) AS n_persons,
-        |  CAST((SUM(abs(c_cs * n_tot - g_s * n_c)) * 1000000)
-        |    // (2 * MAX(n_c) * MAX(n_tot)) AS BIGINT) AS tvd_ppm,
-        |  CAST((SUM(abs(c_cs * n_tot - g_s * n_c)) * 1000000)
-        |    // (2 * MAX(n_c) * MAX(n_tot)) AS BIGINT) > 300000 AS leaky
-        |FROM grid GROUP BY 1 ORDER BY qi""".stripMargin,
-
-    "fn_nickname_resolve" ->
-      """WITH t AS (
-        |  SELECT ['WILLIAM','BILL','WILL','ROBERT','BOB','ROB',
-        |          'MARGARET','PEGGY','MEG','JOHN','JACK','JOHNNY',
-        |          'ELIZABETH','BETH','LIZ','KATHERINE','KATE','KITTY']
-        |      [CAST(c_custkey % 18 AS INT) + 1] AS raw
-        |  FROM customer),
-        |nicks(nick, canon) AS (VALUES
-        |  ('BILL', 'WILLIAM'), ('WILL', 'WILLIAM'),
-        |  ('BOB', 'ROBERT'), ('ROB', 'ROBERT'),
-        |  ('PEGGY', 'MARGARET'), ('MEG', 'MARGARET'),
-        |  ('JACK', 'JOHN'), ('JOHNNY', 'JOHN'),
-        |  ('BETH', 'ELIZABETH'), ('LIZ', 'ELIZABETH'),
-        |  ('KATE', 'KATHERINE'), ('KITTY', 'KATHERINE')),
-        |r AS (SELECT raw, canon FROM t LEFT JOIN nicks ON t.raw = nicks.nick)
-        |SELECT coalesce(canon, raw) AS canonical,
-        |  CAST(COUNT(*) AS BIGINT) AS n_records,
-        |  CAST(SUM(CASE WHEN canon IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_from_nick,
-        |  CAST(COUNT(DISTINCT raw) AS BIGINT) AS n_spellings
-        |FROM r GROUP BY 1 ORDER BY canonical""".stripMargin,
-
-    "join_mule_network" ->
-      s"""WITH ev AS (
-        |  SELECT event_id, user_id,
-        |    ${duckMd5Bits("amt", "event_id", 6)} % 100000 AS cents
-        |  FROM events),
-        |edges AS (
-        |  SELECT 'u' || CAST(user_id AS VARCHAR) AS src,
-        |    md5('org:' || CAST(event_id AS VARCHAR)) AS dst, cents
-        |  FROM ev WHERE event_id % 29 <> 11
-        |  UNION ALL
-        |  SELECT 'u' || CAST(user_id AS VARCHAR),
-        |    'mule' || CAST(event_id % 3 AS VARCHAR), cents
-        |  FROM ev WHERE event_id % 29 = 11
-        |  UNION ALL
-        |  SELECT 'mule' || CAST(event_id % 3 AS VARCHAR),
-        |    md5('cash:' || CAST(event_id % 3 AS VARCHAR) || ':' || CAST(event_id % 5 AS VARCHAR)),
-        |    cents
-        |  FROM ev WHERE event_id % 29 = 11),
-        |outs AS (SELECT src AS acct, CAST(COUNT(DISTINCT dst) AS BIGINT) AS out_deg,
-        |    CAST(SUM(cents) AS BIGINT) AS out_mass FROM edges GROUP BY 1),
-        |ins AS (SELECT dst AS acct, CAST(COUNT(DISTINCT src) AS BIGINT) AS in_deg,
-        |    CAST(SUM(cents) AS BIGINT) AS in_mass FROM edges GROUP BY 1),
-        |acct AS (
-        |  SELECT coalesce(o.acct, i.acct) AS acct,
-        |    coalesce(out_deg, 0) AS out_deg, coalesce(out_mass, 0) AS out_mass,
-        |    coalesce(in_deg, 0) AS in_deg, coalesce(in_mass, 0) AS in_mass
-        |  FROM outs o FULL OUTER JOIN ins i ON o.acct = i.acct)
-        |SELECT CASE WHEN in_deg >= 3 AND out_deg >= 2 THEN 'mule'
-        |    WHEN in_deg = 0 THEN 'payer'
-        |    WHEN out_deg = 0 THEN 'sink' ELSE 'passthrough' END AS cls,
-        |  CAST(COUNT(*) AS BIGINT) AS n_accounts,
-        |  CAST(SUM(in_mass) AS BIGINT) AS in_mass,
-        |  CAST(SUM(out_mass) AS BIGINT) AS out_mass,
-        |  CAST(MAX(in_deg) AS BIGINT) AS max_in_deg,
-        |  CAST(MAX(out_deg) AS BIGINT) AS max_out_deg
-        |FROM acct GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "join_er_incremental" ->
-      s"""WITH base AS (
-         |  SELECT CAST(c_custkey AS BIGINT) AS k,
-         |    CAST(c_nationkey AS BIGINT) AS city0,
-         |    'cust_' || lpad(CAST(c_custkey AS VARCHAR), 7, '0') AS name,
-         |    1950 + CAST(c_custkey AS BIGINT) % 50 AS yob0
-         |  FROM customer),
-         |idx0 AS (SELECT k AS cluster_id, name, city0 AS city, yob0 AS yob,
-         |    substring(name, 1, 11) AS block FROM base),
-         |batch AS (
-         |  SELECT k,
-         |    CASE WHEN k % 2 = 0 THEN name
-         |      ELSE 'newp_' || lpad(CAST(k AS VARCHAR), 7, '0') END AS bname,
-         |    CASE WHEN k % 2 = 0 AND k % 15 = 2 THEN (city0 + 1) % 25 ELSE city0 END AS bcity,
-         |    CASE WHEN k % 2 = 0 AND k % 9 = 5 THEN yob0 + 1 ELSE yob0 END AS byob
-         |  FROM base WHERE k % 23 = 7),
-         |b2 AS (SELECT k, bname, bcity, byob, substring(bname, 1, 11) AS bblock FROM batch),
-         |${erLinkPassSql("p1", "idx0")},
-         |minted AS (SELECT k + 2000000000 AS cluster_id, bname AS name,
-         |    bcity AS city, byob AS yob, bblock AS block
-         |  FROM p1 WHERE linked_cluster IS NULL),
-         |idx2 AS (SELECT * FROM idx0 UNION ALL SELECT * FROM minted),
-         |${erLinkPassSql("p2", "idx2")}
-         |SELECT step, n, score_mass FROM (
-         |  SELECT '01_clusters_before' AS step, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(NULL AS BIGINT) AS score_mass FROM idx0
-         |  UNION ALL SELECT '02_batch', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT) FROM b2
-         |  UNION ALL SELECT '03_linked', CAST(COUNT(*) AS BIGINT),
-         |    CAST(coalesce(SUM(lscore), 0) AS BIGINT) FROM p1 WHERE linked_cluster IS NOT NULL
-         |  UNION ALL SELECT '04_minted', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT)
-         |    FROM p1 WHERE linked_cluster IS NULL
-         |  UNION ALL SELECT '05_clusters_after', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT) FROM idx2
-         |  UNION ALL SELECT '06_rerun_linked', CAST(COUNT(*) AS BIGINT),
-         |    CAST(coalesce(SUM(lscore), 0) AS BIGINT) FROM p2 WHERE linked_cluster IS NOT NULL
-         |  UNION ALL SELECT '07_rerun_minted', CAST(COUNT(*) AS BIGINT), CAST(NULL AS BIGINT)
-         |    FROM p2 WHERE linked_cluster IS NULL
-         |) ORDER BY step""".stripMargin,
-    "join_fs_em_weights" -> {
-      val init = """p0 AS (SELECT CAST(500000 AS BIGINT) AS pi,
-                   |  CAST(800000 AS BIGINT) AS mn, CAST(800000 AS BIGINT) AS mc,
-                   |  CAST(800000 AS BIGINT) AS my, CAST(200000 AS BIGINT) AS un,
-                   |  CAST(200000 AS BIGINT) AS uc, CAST(200000 AS BIGINT) AS uy)""".stripMargin
-      s"""WITH $fsEmPatternsSql,
-         |$init,
-         |${fsEmEstepSql("e1", "p0")},
-         |${fsEmMstepSql("p1", "e1")},
-         |${fsEmEstepSql("e2", "p1")},
-         |${fsEmMstepSql("p2", "e2")},
-         |${fsEmEstepSql("e3", "p2")},
-         |${fsEmMstepSql("p3", "e3")},
-         |${fsEmEstepSql("e4", "p3")}
-         |SELECT kind, key, n_pairs, value_ppm FROM (
-         |  SELECT 'pattern' AS kind,
-         |    (CASE WHEN gn THEN '1' ELSE '0' END)
-         |      || (CASE WHEN gc THEN '1' ELSE '0' END)
-         |      || (CASE WHEN gy THEN '1' ELSE '0' END) AS key,
-         |    cnt AS n_pairs, r AS value_ppm
-         |  FROM e4
-         |  UNION ALL
-         |  SELECT 'class' AS kind,
-         |    CASE WHEN r >= 900000 THEN 'link'
-         |      WHEN r >= 100000 THEN 'possible' ELSE 'non_link' END AS key,
-         |    CAST(SUM(cnt) AS BIGINT) AS n_pairs, CAST(NULL AS BIGINT) AS value_ppm
-         |  FROM e4 GROUP BY 2
-         |  UNION ALL
-         |  SELECT 'param' AS kind, u.key AS key,
-         |    CAST(NULL AS BIGINT) AS n_pairs, u.value_ppm AS value_ppm
-         |  FROM p3, LATERAL (VALUES
-         |    ('pi', pi), ('m_name', mn), ('m_city', mc), ('m_yob', my),
-         |    ('u_name', un), ('u_city', uc), ('u_yob', uy)) AS u(key, value_ppm)
-         |) ORDER BY kind, key""".stripMargin
-    },
-
-    "llm_ann_filtered" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |st AS (SELECT COUNT(*) AS n_tot FROM e),
-        |cent AS (SELECT vec_id AS cid, emb AS cemb FROM e, st
-        |         WHERE ${duckMd5Bits("CAST(vec_id AS VARCHAR)", 8)} * 1.0
-        |               < 4294967296.0 / sqrt(n_tot * 1.0)),
-        |assigned AS (
-        |  SELECT vec_id, emb, cluster, vec_id % 10 = 3 AS pred FROM (
-        |    SELECT e.vec_id, e.emb, c.cid AS cluster,
-        |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |        ORDER BY ROUND(list_cosine_similarity(e.emb, c.cemb), 4) DESC, c.cid) AS crn
-        |    FROM e CROSS JOIN cent c)
-        |  WHERE crn = 1),
-        |probes AS (SELECT vec_id AS probe_id, emb AS p_emb FROM e WHERE vec_id < 10),
-        |cells AS (
-        |  SELECT probe_id, p_emb, cluster FROM (
-        |    SELECT p.probe_id, p.p_emb, c.cid AS cluster,
-        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
-        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, c.cemb), 4) DESC, c.cid) AS prn
-        |    FROM probes p CROSS JOIN cent c)
-        |  WHERE prn <= 4),
-        |cand AS (
-        |  SELECT ce.probe_id, a.vec_id, a.pred,
-        |    ROUND(list_cosine_similarity(ce.p_emb, a.emb), 4) AS sim
-        |  FROM cells ce JOIN assigned a ON ce.cluster = a.cluster
-        |  WHERE a.vec_id <> ce.probe_id),
-        |pre AS (
-        |  SELECT probe_id, vec_id FROM (
-        |    SELECT probe_id, vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS r
-        |    FROM cand WHERE pred) q WHERE r <= 5),
-        |post AS (
-        |  SELECT probe_id, vec_id FROM (
-        |    SELECT probe_id, vec_id, pred,
-        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) AS r
-        |    FROM cand) q WHERE r <= 5 AND pred),
-        |truth AS (
-        |  SELECT probe_id, vec_id FROM (
-        |    SELECT p.probe_id, e.vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id
-        |        ORDER BY ROUND(list_cosine_similarity(p.p_emb, e.emb), 4) DESC, e.vec_id) AS r
-        |    FROM probes p JOIN e ON e.vec_id % 10 = 3 AND e.vec_id <> p.probe_id) q
-        |  WHERE r <= 5),
-        |nt AS (SELECT probe_id, CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth GROUP BY 1),
-        |grade AS (
-        |  SELECT s.strategy, p.probe_id,
-        |    CAST(coalesce(f.ret, 0) AS BIGINT) AS n_returned,
-        |    CAST(coalesce(h.hits, 0) AS BIGINT) AS n_hits,
-        |    CAST(coalesce(nt.n_truth, 0) AS BIGINT) AS n_truth
-        |  FROM probes p
-        |  CROSS JOIN (VALUES ('pre_filter'), ('post_filter')) AS s(strategy)
-        |  LEFT JOIN (
-        |    SELECT 'pre_filter' AS strategy, probe_id, COUNT(*) AS ret FROM pre GROUP BY 2
-        |    UNION ALL
-        |    SELECT 'post_filter' AS strategy, probe_id, COUNT(*) AS ret FROM post GROUP BY 2
-        |  ) f ON f.strategy = s.strategy AND f.probe_id = p.probe_id
-        |  LEFT JOIN (
-        |    SELECT 'pre_filter' AS strategy, x.probe_id, COUNT(*) AS hits
-        |    FROM pre x JOIN truth t ON t.probe_id = x.probe_id AND t.vec_id = x.vec_id GROUP BY 2
-        |    UNION ALL
-        |    SELECT 'post_filter' AS strategy, x.probe_id, COUNT(*) AS hits
-        |    FROM post x JOIN truth t ON t.probe_id = x.probe_id AND t.vec_id = x.vec_id GROUP BY 2
-        |  ) h ON h.strategy = s.strategy AND h.probe_id = p.probe_id
-        |  LEFT JOIN nt ON nt.probe_id = p.probe_id)
-        |SELECT strategy, probe_id, n_returned, n_hits, n_truth,
-        |  (n_hits * 1000000) // NULLIF(n_truth, 0) AS recall_ppm
-        |FROM grade ORDER BY strategy, probe_id""".stripMargin
-  )
 }

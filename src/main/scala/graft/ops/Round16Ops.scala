@@ -16,7 +16,41 @@ import graft.Tables
   * lacked (Wilson score bounds, James–Stein).
   */
 object Round16Ops extends Family {
-  val queries: Map[String, Q] = unique(
+  /** Bech32 polymod steps (BIP-173): the state transition
+    * chk' = ((chk & 0x1ffffff) << 5) ^ g ^ ⊕{GEN_i : bit i of chk>>25}
+    * is a bijective LFSR step, so ANY single 5-bit-group substitution
+    * changes the final state — the detection law the op grades. `xor`,
+    * `shl`, `shr` abstract the dialect (Spark `a ^ b`; DuckDB `xor()`
+    * since its `^` is POWER). */
+  private[ops] val Bech32Gen =
+    Seq(0x3b6a57b2L, 0x26508e6dL, 0x1ea119faL, 0x3d4233ddL, 0x2a1462b3L)
+
+  /** Shared oracle CTEs for the ring-chain graph fixture. */
+  private val RingChainCtes =
+    """nodes AS MATERIALIZED (
+      |  SELECT DISTINCT CAST(c_custkey % 120 AS BIGINT) AS v FROM customer),
+      |ring AS (
+      |  SELECT LEAST(v, (v // 6) * 6 + (v % 6 + 1) % 6) AS a,
+      |    GREATEST(v, (v // 6) * 6 + (v % 6 + 1) % 6) AS b
+      |  FROM nodes),
+      |edges AS MATERIALIZED (SELECT DISTINCT a, b FROM (
+      |  SELECT a, b FROM ring
+      |  UNION ALL SELECT v AS a, v + 1 AS b FROM nodes
+      |  WHERE v % 6 = 5 AND v < 114) q)""".stripMargin
+
+  /** Nine unrolled min-label + pointer-jump rounds (the ccComponents
+    * mirror): lab0 must exist; emits lab1..lab9 over `dire`. */
+  private val CcRoundsSql: String = (1 to 9).map { r =>
+    s"""lab$r AS MATERIALIZED (
+       |  SELECT p.x, p.v, LEAST(p.l, q.l, coalesce(nm.nl, p.l)) AS l
+       |  FROM lab${r - 1} p
+       |  JOIN lab${r - 1} q ON q.x = p.x AND q.v = p.l
+       |  LEFT JOIN (SELECT e.x, e.b AS v, MIN(m.l) AS nl
+       |    FROM dire e JOIN lab${r - 1} m ON m.x = e.x AND m.v = e.a
+       |    GROUP BY 1, 2) nm ON nm.x = p.x AND nm.v = p.v)""".stripMargin
+  }.mkString(",\n")
+
+  val ops: Seq[Op] = Seq(
     // ANN index DELETE + threshold compaction — the GDPR-erasure leg that
     // completes the persisted IVF lifecycle (build: llm_ann_ivf_pq, serve:
     // llm_ann_filtered, maintain: llm_ann_index_maintain). A 1-in-7
@@ -36,7 +70,7 @@ object Round16Ops extends Family {
     // native codegen'd graft_ldot over floor(x·10⁴) BIGINTs; search work
     // is probes × 4 cells, only the index build and the recall baseline
     // scan the corpus — the IVF law at any scale.
-    "llm_ann_index_delete" -> ((s, d) => {
+    Op("llm_ann_index_delete", (s, d) => {
       def dot(a: String, b: String) = s"graft_ldot($a, $b)"
       val vecs = Tables.embeddings(s, d).select(col("vec_id"),
         expr("transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) * 10000) AS BIGINT))")
@@ -126,7 +160,99 @@ object Round16Ops extends Family {
           scored1.where(col("vec_id") % 7 =!= 3), census(idx1)))
         .unionByName(grade("compacted", serveScored(compacted), census(compacted)))
         .orderBy("phase")
-    }),
+    },
+      s"""WITH pos AS (SELECT CAST(i AS BIGINT) AS pos FROM generate_series(0, 63) AS t(i)),
+        |raw AS (
+        |  SELECT e.vec_id, p.pos,
+        |    CAST(FLOOR(CAST(e.embedding[p.pos + 1] AS DOUBLE) * 10000) AS BIGINT) AS xm
+        |  FROM embeddings e, pos p
+        |  WHERE p.pos + 1 <= len(e.embedding)),
+        |szs AS (SELECT COUNT(DISTINCT vec_id) AS t,
+        |    COUNT(DISTINCT CASE WHEN vec_id % 7 = 3 THEN vec_id END) AS del
+        |  FROM raw),
+        |md AS (SELECT GREATEST(1, CAST(FLOOR(SQRT(CAST(t AS DOUBLE))) AS BIGINT)) AS m FROM szs),
+        |cent AS (
+        |  SELECT r.vec_id AS cid, r.pos, r.xm AS cm FROM raw r, md
+        |  WHERE ${duckMd5Bits("CAST(r.vec_id AS VARCHAR)", 8)} % md.m = 0),
+        |asg AS (
+        |  SELECT vec_id, cid AS cluster FROM (
+        |    SELECT r.vec_id, c.cid,
+        |      ROW_NUMBER() OVER (PARTITION BY r.vec_id ORDER BY SUM(r.xm * c.cm) DESC, c.cid) AS rn
+        |    FROM raw r JOIN cent c ON r.pos = c.pos
+        |    GROUP BY r.vec_id, c.cid) q
+        |  WHERE rn = 1),
+        |probe_ids AS (
+        |  SELECT vec_id FROM (SELECT DISTINCT vec_id FROM raw WHERE vec_id % 7 <> 3) q
+        |  ORDER BY md5('dprobe:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 200),
+        |probes AS (
+        |  SELECT r.vec_id AS probe_id, r.pos, r.xm AS pm
+        |  FROM raw r JOIN probe_ids pi ON r.vec_id = pi.vec_id),
+        |truth AS (
+        |  SELECT probe_id, vec_id FROM (
+        |    SELECT probe_id, vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY qdot DESC, vec_id) AS rk
+        |    FROM (
+        |      SELECT p.probe_id, r.vec_id, SUM(p.pm * r.xm) AS qdot
+        |      FROM probes p JOIN raw r ON p.pos = r.pos
+        |      WHERE r.vec_id <> p.probe_id AND r.vec_id % 7 <> 3
+        |      GROUP BY 1, 2) q1) q2
+        |  WHERE rk <= 3),
+        |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth),
+        |cells AS (
+        |  SELECT probe_id, cid AS cluster FROM (
+        |    SELECT p.probe_id, c.cid,
+        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id ORDER BY SUM(p.pm * c.cm) DESC, c.cid) AS rn
+        |    FROM probes p JOIN cent c ON p.pos = c.pos
+        |    GROUP BY p.probe_id, c.cid) q
+        |  WHERE rn <= 4),
+        |cand AS (
+        |  SELECT DISTINCT ce.probe_id, a.vec_id
+        |  FROM cells ce JOIN asg a ON a.cluster = ce.cluster
+        |  WHERE a.vec_id <> ce.probe_id),
+        |scored AS (
+        |  SELECT c.probe_id, c.vec_id, SUM(p.pm * r.xm) AS qdot
+        |  FROM cand c JOIN probes p ON p.probe_id = c.probe_id
+        |  JOIN raw r ON r.vec_id = c.vec_id AND r.pos = p.pos
+        |  GROUP BY 1, 2),
+        |ret_u AS (
+        |  SELECT probe_id, vec_id FROM (
+        |    SELECT probe_id, vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY qdot DESC, vec_id) AS rk
+        |    FROM scored) q WHERE rk <= 3),
+        |ret_m AS (
+        |  SELECT probe_id, vec_id FROM (
+        |    SELECT probe_id, vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY qdot DESC, vec_id) AS rk
+        |    FROM scored WHERE vec_id % 7 <> 3) q WHERE rk <= 3),
+        |gu AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_returned,
+        |    CAST(SUM(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_returned_deleted,
+        |    CAST(SUM(CASE WHEN EXISTS (SELECT 1 FROM truth t
+        |      WHERE t.probe_id = ret_u.probe_id AND t.vec_id = ret_u.vec_id)
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS hits
+        |  FROM ret_u),
+        |gm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_returned,
+        |    CAST(SUM(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_returned_deleted,
+        |    CAST(SUM(CASE WHEN EXISTS (SELECT 1 FROM truth t
+        |      WHERE t.probe_id = ret_m.probe_id AND t.vec_id = ret_m.vec_id)
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS hits
+        |  FROM ret_m)
+        |SELECT * FROM (
+        |  SELECT 'unmasked' AS phase, CAST(szs.t AS BIGINT) AS n_index_rows,
+        |    CAST(szs.del AS BIGINT) AS n_tombstones, gu.n_returned,
+        |    gu.n_returned_deleted, nt.n_truth, gu.hits,
+        |    (gu.hits * 1000000) // nt.n_truth AS recall_ppm
+        |  FROM gu, nt, szs
+        |  UNION ALL
+        |  SELECT 'masked', CAST(szs.t AS BIGINT), CAST(szs.del AS BIGINT),
+        |    gm.n_returned, gm.n_returned_deleted, nt.n_truth, gm.hits,
+        |    (gm.hits * 1000000) // nt.n_truth
+        |  FROM gm, nt, szs
+        |  UNION ALL
+        |  SELECT 'compacted', CAST(szs.t - szs.del AS BIGINT), CAST(0 AS BIGINT),
+        |    gm.n_returned, gm.n_returned_deleted, nt.n_truth, gm.hits,
+        |    (gm.hits * 1000000) // nt.n_truth
+        |  FROM gm, nt, szs) q
+        |ORDER BY phase""".stripMargin),
 
     // Wilson score interval — the CTR lower bound a ranker actually
     // serves (agg_laplace_ctr smooths the point estimate; Wilson bounds
@@ -138,7 +264,7 @@ object Round16Ops extends Family {
     // n_items — asserted in the wave spec). Native codegen'd IntSqrt does
     // the root; the oracle mirrors with CASE-corrected FLOOR(SQRT).
     // Linear projection + rollup.
-    "agg_wilson_ci" -> ((s, d) => {
+    Op("agg_wilson_ci", (s, d) => {
       Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 3).cast("int"))
@@ -163,6 +289,34 @@ object Round16Ops extends Family {
             .as("n_coverage_ok"),
           sum(when(col("lower_ppm") > 0L, 1L).otherwise(0L)).as("n_lower_pos"))
         .orderBy("cohort")
+    },
+      {
+      val srt = Round12cOps.duckIsqrt("(10000 * clicks * (views - clicks)) // views + 9604")
+      s"""WITH t AS (
+         |  SELECT CAST(p_partkey % 3 AS INT) AS cohort, p_partkey AS k,
+         |    ${duckMd5Bits("wv", "p_partkey", 6)} % 100 AS views
+         |  FROM part),
+         |c AS (
+         |  SELECT cohort, views,
+         |    ${duckMd5Bits("wc", "k", 6)} % (views + 1) AS clicks
+         |  FROM t WHERE views > 0),
+         |w AS (
+         |  SELECT cohort, views, clicks,
+         |    (clicks * 1000000) // views AS raw_ppm,
+         |    $srt AS srt
+         |  FROM c),
+         |b AS (
+         |  SELECT cohort, raw_ppm,
+         |    ((10000 * clicks + 19208 - 196 * srt) * 1000000) // (10000 * views + 38416) AS lower_ppm,
+         |    ((10000 * clicks + 19208 + 196 * srt) * 1000000) // (10000 * views + 38416) AS upper_ppm
+         |  FROM w)
+         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_items,
+         |  CAST(SUM(lower_ppm) AS BIGINT) AS lower_mass_ppm,
+         |  CAST(SUM(upper_ppm) AS BIGINT) AS upper_mass_ppm,
+         |  CAST(SUM(CASE WHEN lower_ppm <= raw_ppm AND raw_ppm <= upper_ppm
+         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_coverage_ok,
+         |  CAST(SUM(CASE WHEN lower_ppm > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_lower_pos
+         |FROM b GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // James–Stein shrinkage — the estimator that DOMINATES the raw
@@ -177,7 +331,7 @@ object Round16Ops extends Family {
     // 10⁷)) DIV 10⁶ — identical floors both engines, no signed DIV.
     // Graded per cohort + total: SSE of raw vs JS against the PLANTED θ;
     // the wave spec asserts Stein dominance (total js_sse < raw_sse).
-    "agg_james_stein" -> ((s, d) => {
+    Op("agg_james_stein", (s, d) => {
       val base = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("cohort", (col("k") % 3).cast("int"))
@@ -214,7 +368,46 @@ object Round16Ops extends Family {
         .select(lit(-1).cast("int").as("cohort"), col("n_items"),
           col("b_shrink_ppm"), col("raw_sse"), col("js_sse"))
       per.unionByName(tot).orderBy("cohort")
-    }),
+    },
+      s"""WITH base AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    CAST(c_custkey % 3 AS INT) AS cohort,
+        |    5000 + (c_custkey % 3) * 200 AS theta,
+        |    5000 + (c_custkey % 3) * 200
+        |      + ${duckMd5Bits("js", "c_custkey", 6)} % 199 - 99 AS x
+        |  FROM customer),
+        |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS kc,
+        |    (CAST(SUM(x) AS BIGINT) * 1000) // COUNT(*) AS xbar_milli
+        |  FROM base),
+        |dev AS (SELECT b.*, g.kc, g.xbar_milli,
+        |    b.x * 1000 - g.xbar_milli AS dev_milli
+        |  FROM base b, g),
+        |sh AS (SELECT CAST(1000000 - LEAST(CAST(1000000 AS HUGEINT),
+        |      (CAST(MAX(kc) - 3 AS HUGEINT) * 3300 * 1000000000000)
+        |        // CAST(SUM(dev_milli * dev_milli) AS HUGEINT)) AS BIGINT)
+        |    AS b_shrink_ppm
+        |  FROM dev),
+        |sc AS (
+        |  SELECT d.cohort,
+        |    (d.x - d.theta) * 1000 AS raw_err,
+        |    d.xbar_milli - 10 * sh.b_shrink_ppm
+        |      + (sh.b_shrink_ppm * (d.dev_milli + 10000000)) // 1000000
+        |      - d.theta * 1000 AS js_err,
+        |    sh.b_shrink_ppm
+        |  FROM dev d, sh)
+        |SELECT * FROM (
+        |  SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_items,
+        |    CAST(MAX(b_shrink_ppm) AS BIGINT) AS b_shrink_ppm,
+        |    CAST(SUM(raw_err * raw_err) AS BIGINT) AS raw_sse,
+        |    CAST(SUM(js_err * js_err) AS BIGINT) AS js_sse
+        |  FROM sc GROUP BY 1
+        |  UNION ALL
+        |  SELECT CAST(-1 AS INT), CAST(COUNT(*) AS BIGINT),
+        |    CAST(MAX(b_shrink_ppm) AS BIGINT),
+        |    CAST(SUM(raw_err * raw_err) AS BIGINT),
+        |    CAST(SUM(js_err * js_err) AS BIGINT)
+        |  FROM sc) q
+        |ORDER BY cohort""".stripMargin),
 
     // Multi-level Louvain — graph_louvain_pass iterated with community
     // COARSENING (the real algorithm's outer loop): after each adoption
@@ -230,7 +423,7 @@ object Round16Ops extends Family {
     // shrinks). The contraction join is the scale shape: each level is
     // one members-join + rollup, and the graph SHRINKS geometrically —
     // the 100 TB community detection recipe.
-    "graph_louvain_levels" -> ((s, d) => {
+    Op("graph_louvain_levels", (s, d) => {
       def pass(e: DataFrame): DataFrame = {
         val deg = e.select(col("a").as("n"),
             when(col("a") === col("b"), col("w") * 2).otherwise(col("w")).as("w"))
@@ -287,6 +480,18 @@ object Round16Ops extends Family {
       val m3 = pass(g3)
       census(1, g1, m1).unionByName(census(2, g2, m2))
         .unionByName(census(3, g3, m3)).orderBy("level")
+    },
+      {
+      s"""WITH ${GraphOps.louvainOracleCtes},
+         |g1 AS (SELECT a, b, w FROM hw),
+         |${louvLevelSql(1, "g1")},
+         |${louvLevelSql(2, "g2")},
+         |${louvLevelSql(3, "g3")}
+         |SELECT * FROM (
+         |  SELECT cen1.*, intx1.internal_w_mass FROM cen1, intx1
+         |  UNION ALL SELECT cen2.*, intx2.internal_w_mass FROM cen2, intx2
+         |  UNION ALL SELECT cen3.*, intx3.internal_w_mass FROM cen3, intx3) q
+         |ORDER BY level""".stripMargin
     }),
 
     // Max-flow on the layered supply DAG — S → supplier_i → sink_j → T
@@ -304,7 +509,7 @@ object Round16Ops extends Family {
     // saturated demand arcs, LP duality made exact), arc census, the
     // northwest-corner staircase shape (every demand saturated, at most
     // one partially-used supply), slack mass.
-    "graph_max_flow" -> ((s, d) => {
+    Op("graph_max_flow", (s, d) => {
       // the ordered cumulative ledger IS the operator (northwest-corner
       // is order-defined); at cluster scale the cumsum distributes via
       // the standard per-partition-offset two-pass
@@ -353,7 +558,47 @@ object Round16Ops extends Family {
         .select("total_flow", "min_cut_mass", "n_arcs", "max_arc_flow",
           "n_demands_saturated", "n_demands_touched", "n_supplies_full",
           "n_supplies_partial", "n_supplies_idle", "supply_slack_mass")
-    }),
+    },
+      s"""WITH base AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
+        |sup AS (
+        |  SELECT k, s, CAST(SUM(s) OVER (ORDER BY k) AS BIGINT) AS se,
+        |    CAST(SUM(s) OVER (ORDER BY k) - s AS BIGINT) AS ss
+        |  FROM (SELECT k,
+        |      ${duckMd5Bits("mfs", "k", 6)} % 200 + 500 AS s
+        |    FROM base) q),
+        |dem AS (
+        |  SELECT k, dc, CAST(SUM(dc) OVER (ORDER BY k) AS BIGINT) AS de,
+        |    CAST(SUM(dc) OVER (ORDER BY k) - dc AS BIGINT) AS ds
+        |  FROM (SELECT k,
+        |      ${duckMd5Bits("mfd", "k", 6)} % 200 + 100 AS dc
+        |    FROM base) q),
+        |arcs AS (
+        |  SELECT sup.k AS sk, dem.k AS dk, sup.s, dem.dc,
+        |    CAST(LEAST(sup.se, dem.de) - GREATEST(sup.ss, dem.ds) AS BIGINT) AS flow
+        |  FROM sup JOIN dem ON sup.ss < dem.de AND dem.ds < sup.se),
+        |tot AS (SELECT CAST(SUM(flow) AS BIGINT) AS total_flow,
+        |    CAST(COUNT(*) AS BIGINT) AS n_arcs,
+        |    CAST(MAX(flow) AS BIGINT) AS max_arc_flow FROM arcs),
+        |cut AS (SELECT CAST(SUM(dc) AS BIGINT) AS min_cut_mass FROM dem),
+        |ps AS (SELECT sk, MAX(s) AS s, CAST(SUM(flow) AS BIGINT) AS outf
+        |  FROM arcs GROUP BY 1),
+        |scl AS (
+        |  SELECT
+        |    CAST(SUM(CASE WHEN coalesce(outf, 0) = sup.s THEN 1 ELSE 0 END) AS BIGINT) AS n_supplies_full,
+        |    CAST(SUM(CASE WHEN coalesce(outf, 0) > 0 AND coalesce(outf, 0) < sup.s THEN 1 ELSE 0 END) AS BIGINT) AS n_supplies_partial,
+        |    CAST(SUM(CASE WHEN coalesce(outf, 0) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_supplies_idle,
+        |    CAST(SUM(sup.s - coalesce(outf, 0)) AS BIGINT) AS supply_slack_mass
+        |  FROM sup LEFT JOIN ps ON ps.sk = sup.k),
+        |pd AS (SELECT dk, MAX(dc) AS dc, CAST(SUM(flow) AS BIGINT) AS inn
+        |  FROM arcs GROUP BY 1),
+        |dcl AS (
+        |  SELECT CAST(SUM(CASE WHEN inn = dc THEN 1 ELSE 0 END) AS BIGINT) AS n_demands_saturated,
+        |    CAST(COUNT(*) AS BIGINT) AS n_demands_touched
+        |  FROM pd)
+        |SELECT tot.total_flow, cut.min_cut_mass, tot.n_arcs, tot.max_arc_flow,
+        |  dcl.n_demands_saturated, dcl.n_demands_touched, scl.n_supplies_full,
+        |  scl.n_supplies_partial, scl.n_supplies_idle, scl.supply_slack_mass
+        |FROM tot, cut, scl, dcl""".stripMargin),
 
     // TFRecord shard ingest — closes the training-shard format matrix
     // (WebDataset tar / zip / SequenceFile / TFRecord): a 1-in-6 doc
@@ -367,7 +612,7 @@ object Round16Ops extends Family {
     // foreachPartition-side like every sink here. Graded per lang:
     // records, exact payload byte conservation, both-CRC-ok counts, key
     // range.
-    "source_tfrecord" -> ((s, d) => {
+    Op("source_tfrecord", (s, d) => {
       val dir = Scratch.staged("tfrec", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 6 === 2)
           .select(col("doc_id"), col("lang"), col("text")).collect()
@@ -401,7 +646,15 @@ object Round16Ops extends Family {
             .as("n_crc_ok"),
           min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
         .orderBy("lang")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT doc_id, lang, text FROM documents WHERE doc_id % 6 = 2)
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_records,
+        |  CAST(SUM(strlen(CAST(doc_id AS VARCHAR) || '|' || lang || '|' || text)) AS BIGINT) AS payload_byte_mass,
+        |  CAST(COUNT(*) AS BIGINT) AS n_crc_ok,
+        |  CAST(MIN(doc_id) AS BIGINT) AS min_doc,
+        |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
+        |FROM t GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // Hierarchical geo cells (H3/S2-style integer quadtree) — the
     // multi-resolution blocking a person-service address matcher runs:
@@ -414,7 +667,7 @@ object Round16Ops extends Family {
     // ppm by the ring-covering law, graded against the brute-force truth
     // on the sample. Candidate mass is the boundedness metric: ring
     // candidates ≪ n²/2 brute pairs. Tall metric/value output.
-    "join_geo_cell" -> ((s, d) => {
+    Op("join_geo_cell", (s, d) => {
       // 16 planted cluster centers on a 4×4 macro-grid, ±3000 md5 offsets:
       // ε-pairs (ε = 4000) exist at EVERY scale factor, and clusters
       // straddle r=8 cell boundaries so the ring join is non-trivial
@@ -475,7 +728,53 @@ object Round16Ops extends Family {
         .unionByName(viol46).unionByName(viol68).unionByName(nCand)
         .unionByName(nTrue).unionByName(nFound).unionByName(recall)
         .orderBy("metric")
-    }),
+    },
+      s"""WITH pts AS (
+        |  SELECT k, gc,
+        |    (gc % 4) * 262144 + 131072 + ox % 6001 - 3000 AS x,
+        |    (gc // 4) * 262144 + 131072 + oy % 6001 - 3000 AS y
+        |  FROM (
+        |    SELECT CAST(p_partkey AS BIGINT) AS k,
+        |      ${duckMd5Bits("gc", "p_partkey", 6)} % 16 AS gc,
+        |      ${duckMd5Bits("gox", "p_partkey", 6)} AS ox,
+        |      ${duckMd5Bits("goy", "p_partkey", 6)} AS oy
+        |    FROM part) q),
+        |cc AS (
+        |  SELECT k, x, y,
+        |    (x // 65536) * 16 + (y // 65536) AS c4,
+        |    (x // 16384) * 64 + (y // 16384) AS c6,
+        |    (x // 4096) * 256 + (y // 4096) AS c8
+        |  FROM pts),
+        |smp AS (
+        |  SELECT k, x, y, c8 FROM cc
+        |  ORDER BY md5('gs:' || CAST(k AS VARCHAR)), k LIMIT 300),
+        |tp AS (
+        |  SELECT a.k AS k1, b.k AS k2 FROM smp a JOIN smp b ON a.k < b.k
+        |  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 16000000),
+        |rc AS (
+        |  SELECT a.k AS k1, b.k AS k2, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
+        |  FROM smp a JOIN smp b ON a.k < b.k
+        |  WHERE abs(a.c8 // 256 - b.c8 // 256) <= 1 AND abs(a.c8 % 256 - b.c8 % 256) <= 1),
+        |fp AS (
+        |  SELECT k1, k2 FROM rc
+        |  WHERE (x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2) <= 16000000)
+        |SELECT * FROM (
+        |  SELECT 'cells_r4' AS metric, CAST(COUNT(DISTINCT c4) AS BIGINT) AS value FROM cc
+        |  UNION ALL SELECT 'cells_r6', CAST(COUNT(DISTINCT c6) AS BIGINT) FROM cc
+        |  UNION ALL SELECT 'cells_r8', CAST(COUNT(DISTINCT c8) AS BIGINT) FROM cc
+        |  UNION ALL SELECT 'max_pop_r8', CAST(MAX(p) AS BIGINT) FROM (
+        |    SELECT COUNT(*) AS p FROM cc GROUP BY c8) q
+        |  UNION ALL SELECT 'containment_viol_4_6', CAST(SUM(CASE WHEN
+        |      ((c6 // 64) // 4) * 16 + ((c6 % 64) // 4) <> c4 THEN 1 ELSE 0 END) AS BIGINT) FROM cc
+        |  UNION ALL SELECT 'containment_viol_6_8', CAST(SUM(CASE WHEN
+        |      ((c8 // 256) // 4) * 64 + ((c8 % 256) // 4) <> c6 THEN 1 ELSE 0 END) AS BIGINT) FROM cc
+        |  UNION ALL SELECT 'ring_candidate_pairs', CAST(COUNT(*) AS BIGINT) FROM rc
+        |  UNION ALL SELECT 'true_pairs', CAST(COUNT(*) AS BIGINT) FROM tp
+        |  UNION ALL SELECT 'found_pairs', CAST(COUNT(*) AS BIGINT) FROM fp
+        |  UNION ALL SELECT 'recall_ppm',
+        |    CAST(((SELECT COUNT(*) FROM fp f JOIN tp t ON t.k1 = f.k1 AND t.k2 = f.k2)
+        |      * 1000000) // NULLIF((SELECT COUNT(*) FROM tp), 0) AS BIGINT)) q
+        |ORDER BY metric""".stripMargin),
 
     // Safety stock + reorder point — the inventory control law a supply
     // planner serves: per part 24 sequence-indexed demand samples with
@@ -486,7 +785,7 @@ object Round16Ops extends Family {
     // DIV 100 (z = 1.96 exactly), rop = mean_floor·L + ss. Graded per
     // class: parts, ss/rop masses, max ss — the wave spec asserts ss
     // grows with the planted demand spread. Projection + two rollups.
-    "agg_safety_stock" -> ((s, d) => {
+    Op("agg_safety_stock", (s, d) => {
       val per = Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("p"))
         .withColumn("cls", (col("p") % 5).cast("int"))
@@ -503,6 +802,30 @@ object Round16Ops extends Family {
         .agg(count(lit(1)).as("n_parts"), sum("ss").as("ss_mass"),
           sum("rop").as("rop_mass"), max("ss").as("max_ss"))
         .orderBy("cls")
+    },
+      {
+      val isq = Round12cOps.duckIsqrt("var_floor * lt")
+      s"""WITH obs AS (
+         |  SELECT p, cls, i,
+         |    ${duckMd5Bits("'sd:' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 6)}
+         |      % (20 * (cls + 1)) + 100 AS x
+         |  FROM (SELECT CAST(p_partkey AS BIGINT) AS p,
+         |      CAST(p_partkey % 5 AS INT) AS cls FROM part) q,
+         |    generate_series(0, 23) AS t(i)),
+         |per AS (
+         |  SELECT p, cls, p % 3 + 1 AS lt,
+         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(x * x) AS BIGINT) AS qx
+         |  FROM obs GROUP BY 1, 2),
+         |v AS (SELECT p, cls, lt, sx,
+         |    (24 * qx - sx * sx) // (24 * 24) AS var_floor FROM per),
+         |ss AS (SELECT p, cls,
+         |    (196 * $isq) // 100 AS ss, lt, sx FROM v),
+         |r AS (SELECT cls, ss, (sx // 24) * lt + ss AS rop FROM ss)
+         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_parts,
+         |  CAST(SUM(ss) AS BIGINT) AS ss_mass,
+         |  CAST(SUM(rop) AS BIGINT) AS rop_mass,
+         |  CAST(MAX(ss) AS BIGINT) AS max_ss
+         |FROM r GROUP BY 1 ORDER BY cls""".stripMargin
     }),
 
     // WebDataset index sidecars — the .idx offset files that make tar
@@ -515,7 +838,7 @@ object Round16Ops extends Family {
     // offset and size must match on every member, graded per shard with
     // exact byte masses. The oracle replays the 512-block arithmetic from
     // the documents table directly.
-    "source_webdataset_index" -> ((s, d) => {
+    Op("source_webdataset_index", (s, d) => {
       val dir = Scratch.staged("wdsidx", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 9 === 4)
           .select(col("doc_id"), col("text")).collect()
@@ -577,7 +900,23 @@ object Round16Ops extends Family {
           sum("size").as("payload_byte_mass"),
           max("off").as("max_offset"))
         .orderBy("shard")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT doc_id, CAST(doc_id % 2 AS INT) AS shard,
+        |    CAST(strlen(text) AS BIGINT) AS size
+        |  FROM documents WHERE doc_id % 9 = 4),
+        |o AS (
+        |  SELECT shard, doc_id, size,
+        |    CAST(coalesce(SUM(512 + ((size + 511) // 512) * 512) OVER (
+        |      PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
+        |  FROM t)
+        |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_members,
+        |  CAST(COUNT(*) AS BIGINT) AS n_offset_match,
+        |  CAST(COUNT(*) AS BIGINT) AS n_size_match,
+        |  CAST(SUM(size) AS BIGINT) AS payload_byte_mass,
+        |  CAST(MAX(off) AS BIGINT) AS max_offset
+        |FROM o GROUP BY 1 ORDER BY shard""".stripMargin),
 
     // Articulation points (cut vertices) — the single-point-of-failure
     // census a network/AML analyst runs on a transaction graph: planted
@@ -592,7 +931,7 @@ object Round16Ops extends Family {
     // propagation would need 76). Work is O(rounds · exclusions · |E|) —
     // at corpus scale the exclusion set narrows to candidate vertices,
     // the same vectorized shape. The oracle replays all 9 rounds.
-    "graph_articulation" -> ((s, d) => {
+    Op("graph_articulation", (s, d) => {
       val (nodes, edges) = ringChainGraph(s, d)
       val excl = nodes.select(col("v").as("x"))
         .unionByName(s.range(1).select(lit(-1L).as("x")))
@@ -606,7 +945,22 @@ object Round16Ops extends Family {
         .select(col("x").as("node"), col("ncomp").as("n_comps_without"),
           (col("ncomp") > col("base_comps")).as("is_articulation"))
         .orderBy("node")
-    }),
+    },
+      s"""WITH $RingChainCtes,
+         |excl AS (SELECT v AS x FROM nodes UNION ALL SELECT -1),
+         |nodesx AS (SELECT e.x, n.v FROM excl e, nodes n WHERE n.v <> e.x),
+         |ex0 AS (SELECT e.x, g.a, g.b FROM excl e, edges g
+         |  WHERE g.a <> e.x AND g.b <> e.x),
+         |dire AS MATERIALIZED (
+         |  SELECT x, a, b FROM ex0 UNION ALL SELECT x, b, a FROM ex0),
+         |lab0 AS MATERIALIZED (SELECT x, v, v AS l FROM nodesx),
+         |$CcRoundsSql,
+         |comps AS (SELECT x, CAST(COUNT(DISTINCT l) AS BIGINT) AS ncomp
+         |  FROM lab9 GROUP BY 1),
+         |base AS (SELECT ncomp AS base_comps FROM comps WHERE x = -1)
+         |SELECT c.x AS node, c.ncomp AS n_comps_without,
+         |  c.ncomp > b.base_comps AS is_articulation
+         |FROM comps c, base b WHERE c.x <> -1 ORDER BY node""".stripMargin),
 
     // Bridge edges — the companion census (an edge is a bridge iff its
     // removal disconnects its endpoints): same planted ring-chain, same
@@ -615,7 +969,7 @@ object Round16Ops extends Family {
     // are exactly the bridge set; every ring edge sits on a cycle and
     // survives. Graded per edge with the component count its removal
     // leaves.
-    "graph_bridges" -> ((s, d) => {
+    Op("graph_bridges", (s, d) => {
       val (nodes, edges) = ringChainGraph(s, d)
       val eid = edges.withColumn("eid", col("a") * 1000L + col("b"))
       val excl = eid.select(col("eid").as("x"))
@@ -631,7 +985,22 @@ object Round16Ops extends Family {
           col("ncomp").as("n_comps_without"),
           (col("ncomp") > col("base_comps")).as("is_bridge"))
         .orderBy("a", "b")
-    }),
+    },
+      s"""WITH $RingChainCtes,
+         |eid AS (SELECT a, b, a * 1000 + b AS eid FROM edges),
+         |excl AS (SELECT eid AS x FROM eid UNION ALL SELECT -1),
+         |nodesx AS (SELECT e.x, n.v FROM excl e, nodes n),
+         |ex0 AS (SELECT e.x, g.a, g.b FROM excl e, eid g WHERE g.eid <> e.x),
+         |dire AS MATERIALIZED (
+         |  SELECT x, a, b FROM ex0 UNION ALL SELECT x, b, a FROM ex0),
+         |lab0 AS MATERIALIZED (SELECT x, v, v AS l FROM nodesx),
+         |$CcRoundsSql,
+         |comps AS (SELECT x, CAST(COUNT(DISTINCT l) AS BIGINT) AS ncomp
+         |  FROM lab9 GROUP BY 1),
+         |base AS (SELECT ncomp AS base_comps FROM comps WHERE x = -1)
+         |SELECT c.x // 1000 AS a, c.x % 1000 AS b,
+         |  c.ncomp AS n_comps_without, c.ncomp > bs.base_comps AS is_bridge
+         |FROM comps c, base bs WHERE c.x <> -1 ORDER BY a, b""".stripMargin),
 
     // ABA routing-number checksum — the payments-intake gate beside
     // fn_iban_mod97: 8 md5 digits + a DERIVED ninth so the weighted sum
@@ -641,7 +1010,7 @@ object Round16Ops extends Family {
     // caught — the invalid census must equal the planted corruption
     // census exactly (asserted in the wave spec). Linear projection +
     // rollup.
-    "fn_aba_routing" -> ((s, d) => {
+    Op("fn_aba_routing", (s, d) => {
       def dig(i: Int) =
         s"${md5Bits("concat('aba:', CAST(k AS STRING))", 1, i)} % 10"
       val t = Tables.customer(s, d)
@@ -666,6 +1035,34 @@ object Round16Ops extends Family {
           sum(when(!col("valid"), 1L).otherwise(0L)).as("n_invalid"),
           sum(when(col("corrupt"), 1L).otherwise(0L)).as("n_corrupted"))
         .orderBy("cohort")
+    },
+      {
+      def dig(i: Int) =
+        s"${duckMd5Bits("'aba:' || CAST(k AS VARCHAR)", 1, i)} % 10"
+      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
+         |w AS (
+         |  SELECT k,
+         |    3 * (${dig(1)} + ${dig(4)} + ${dig(7)})
+         |      + 7 * (${dig(2)} + ${dig(5)} + ${dig(8)})
+         |      + (${dig(3)} + ${dig(6)}) AS wsum8,
+         |    k % 9 = 4 AS corrupt,
+         |    ${duckMd5Bits("abp", "k", 4)} % 9 + 1 AS cpos,
+         |    ${duckMd5Bits("abd", "k", 4)} % 9 + 1 AS cdelta
+         |  FROM t),
+         |v AS (
+         |  SELECT k, corrupt,
+         |    wsum8 + (10 - wsum8 % 10) % 10
+         |      + CASE WHEN corrupt THEN
+         |          (CASE WHEN cpos IN (1, 4, 7) THEN 3
+         |                WHEN cpos IN (2, 5, 8) THEN 7 ELSE 1 END) * cdelta
+         |        ELSE 0 END AS wsum
+         |  FROM w)
+         |SELECT CAST(k % 4 AS INT) AS cohort,
+         |  CAST(COUNT(*) AS BIGINT) AS n_numbers,
+         |  CAST(SUM(CASE WHEN wsum % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
+         |  CAST(SUM(CASE WHEN wsum % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
+         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
+         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // Holt–Winters additive triple smoothing — the seasonal forecaster
@@ -681,7 +1078,7 @@ object Round16Ops extends Family {
     // (class, amp-class): level/trend masses, h=1..4 forecast mass,
     // seasonal amplitude mass — the wave spec asserts trend recovery
     // ordering and seasonal amplitude separation.
-    "agg_holt_winters" -> ((s, d) => {
+    Op("agg_holt_winters", (s, d) => {
       val obs = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
         .withColumn("cls", (col("m") % 3).cast("int"))
@@ -704,6 +1101,45 @@ object Round16Ops extends Family {
           sum(expr("fc1 + fc2 + fc3 + fc4")).as("fc_mass"),
           sum(expr("abs(s20) + abs(s21) + abs(s22) + abs(s23)")).as("s_amp_mass"))
         .orderBy("cls", "ampcls")
+    },
+      {
+      // one CTE per smoothing step: DuckDB substitutes lateral column
+      // aliases textually, so the flat 70-alias SELECT exceeds the
+      // binder's 128-deep recursion — chained CTEs keep every level
+      // shallow while computing the identical column sequence
+      val cols = holtWintersCols("//").toMap
+      val initCte = "st3 AS (SELECT *, " +
+        Seq("l3", "b3", "s0", "s1", "s2", "s3")
+          .map(n => s"${cols(n)} AS $n").mkString(", ") + " FROM wide)"
+      val stepCtes = (4 to 23).map { t =>
+        s"st$t AS (SELECT *, ${cols(s"l$t")} AS l$t, ${cols(s"b$t")} AS b$t, " +
+          s"${cols(s"s$t")} AS s$t FROM st${t - 1})"
+      }.mkString(",\n")
+      val fcCols = (1 to 4)
+        .map(h => s"${cols(s"fc$h")} AS fc$h").mkString(", ")
+      s"""WITH obs AS (
+         |  SELECT m, cls, amp, t,
+         |    500 + cls * 8 * t
+         |      + (CASE WHEN t % 4 = 0 THEN amp WHEN t % 4 = 2 THEN -amp ELSE 0 END)
+         |      + ${duckMd5Bits("'hw:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 41 - 20 AS x
+         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
+         |      CAST(s_suppkey % 3 AS INT) AS cls,
+         |      (s_suppkey % 2 + 1) * 100 AS amp FROM supplier) q,
+         |    generate_series(0, 23) AS g(t)),
+         |wide AS (
+         |  SELECT m, cls, amp,
+         |${(0 to 23).map(t => s"    MAX(CASE WHEN t = $t THEN x END) AS x$t").mkString(",\n")}
+         |  FROM obs GROUP BY 1, 2, 3),
+         |$initCte,
+         |$stepCtes,
+         |st AS (SELECT *, $fcCols FROM st23)
+         |SELECT cls, CAST(m % 2 AS INT) AS ampcls,
+         |  CAST(COUNT(*) AS BIGINT) AS n_machines,
+         |  CAST(SUM(l23) AS BIGINT) AS l_mass,
+         |  CAST(SUM(b23) AS BIGINT) AS b_mass,
+         |  CAST(SUM(fc1 + fc2 + fc3 + fc4) AS BIGINT) AS fc_mass,
+         |  CAST(SUM(abs(s20) + abs(s21) + abs(s22) + abs(s23)) AS BIGINT) AS s_amp_mass
+         |FROM st GROUP BY 1, 2 ORDER BY cls, ampcls""".stripMargin
     }),
 
     // Bitrate-ladder planning — the per-title encode plan a video
@@ -715,7 +1151,7 @@ object Round16Ops extends Family {
     // class: titles, eligible/kept rung masses, kept byte mass, titles
     // where the budget bound (kept < eligible) — the 2160 class must hit
     // the budget, the 480 class never does.
-    "mm_bitrate_ladder" -> ((s, d) => {
+    Op("mm_bitrate_ladder", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("src_h", element_at(
@@ -748,7 +1184,28 @@ object Round16Ops extends Family {
           sum(when(col("kept"), 1L).otherwise(0L)).as("kept_rungs"),
           sum(when(col("kept"), col("bytes")).otherwise(0L)).as("kept_byte_mass"))
         .orderBy("src_cls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    CASE o_orderkey % 4 WHEN 0 THEN 2160 WHEN 1 THEN 1080
+        |      WHEN 2 THEN 720 ELSE 480 END AS src_h,
+        |    ${duckMd5Bits("vd", "o_orderkey", 6)} % 540 + 60 AS dur_s,
+        |    ${duckMd5Bits("vc", "o_orderkey", 6)} % 100 AS cx
+        |  FROM orders),
+        |r0 AS (SELECT * FROM (VALUES (2160, 12000), (1080, 5000), (720, 2500),
+        |  (480, 1000), (360, 600)) AS v(h, kbps_base)),
+        |el AS (
+        |  SELECT t.k, t.dur_s, r0.h,
+        |    (r0.kbps_base * (80 + t.cx)) // 130 AS kbps
+        |  FROM t, r0 WHERE r0.h <= t.src_h),
+        |b AS (SELECT *, kbps * dur_s * 125 AS bytes FROM el),
+        |c AS (SELECT *, SUM(bytes) OVER (PARTITION BY k ORDER BY h DESC) AS cum_bytes FROM b)
+        |SELECT CAST(k % 4 AS INT) AS src_cls,
+        |  CAST(COUNT(DISTINCT k) AS BIGINT) AS n_titles,
+        |  CAST(COUNT(*) AS BIGINT) AS eligible_rungs,
+        |  CAST(SUM(CASE WHEN cum_bytes <= 600000000 THEN 1 ELSE 0 END) AS BIGINT) AS kept_rungs,
+        |  CAST(SUM(CASE WHEN cum_bytes <= 600000000 THEN bytes ELSE 0 END) AS BIGINT) AS kept_byte_mass
+        |FROM c GROUP BY 1 ORDER BY src_cls""".stripMargin),
 
     // Model-cascade routing — the cost/quality frontier of serving easy
     // queries with the small model and escalating the rest (the
@@ -759,7 +1216,7 @@ object Round16Ops extends Family {
     // BESIDE both counterfactuals (all-small, all-big) — the wave spec
     // asserts frontier dominance: cascade is cheaper than all-big and
     // better than all-small on every cohort.
-    "llm_router_cascade" -> ((s, d) => {
+    Op("llm_router_cascade", (s, d) => {
       val q = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("diff", expr(
@@ -782,7 +1239,26 @@ object Round16Ops extends Family {
           sum("q_big").as("all_big_quality"),
           (count(lit(1)) * 12L).as("all_big_cost"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH q0 AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    ${duckMd5Bits("rd", "o_orderkey", 6)} % 100 AS diff,
+        |    ${duckMd5Bits("rn", "o_orderkey", 6)} % 21 - 10 AS nz
+        |  FROM orders),
+        |q1 AS (
+        |  SELECT k, diff,
+        |    GREATEST(CAST(0 AS BIGINT), LEAST(CAST(100 AS BIGINT), 100 - diff + nz)) < 60 AS escalate,
+        |    92 - diff // 5 AS q_small, 97 - diff // 10 AS q_big
+        |  FROM q0)
+        |SELECT CAST(k % 4 AS INT) AS cohort,
+        |  CAST(COUNT(*) AS BIGINT) AS n_queries,
+        |  CAST(SUM(CASE WHEN escalate THEN 1 ELSE 0 END) AS BIGINT) AS n_escalated,
+        |  CAST(SUM(CASE WHEN escalate THEN 12 ELSE 1 END) AS BIGINT) AS cascade_cost,
+        |  CAST(SUM(CASE WHEN escalate THEN q_big ELSE q_small END) AS BIGINT) AS cascade_quality,
+        |  CAST(SUM(q_small) AS BIGINT) AS all_small_quality,
+        |  CAST(SUM(q_big) AS BIGINT) AS all_big_quality,
+        |  CAST(COUNT(*) * 12 AS BIGINT) AS all_big_cost
+        |FROM q1 GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Varint-delimited shard ingest — the protobuf wire-format framing
     // (LEB128 length prefix + payload, the fifth member of the shard
@@ -793,7 +1269,7 @@ object Round16Ops extends Family {
     // length band) and must equal the decoder's byte accounting — a
     // mis-stepped varint shifts every later frame and shatters both
     // masses. Graded per lang.
-    "source_varint_delimited" -> ((s, d) => {
+    Op("source_varint_delimited", (s, d) => {
       val dir = Scratch.staged("varint", d) { dir =>
         val rows = Tables.documents(s, d).where(col("doc_id") % 7 === 5)
           .select(col("doc_id"), col("lang"), col("text")).collect()
@@ -825,7 +1301,17 @@ object Round16Ops extends Family {
           sum("frame_bytes").as("varint_overhead_bytes"),
           min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
         .orderBy("lang")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT doc_id, lang,
+        |    CAST(strlen(CAST(doc_id AS VARCHAR) || '|' || lang || '|' || text) AS BIGINT) AS len
+        |  FROM documents WHERE doc_id % 7 = 5)
+        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_records,
+        |  CAST(SUM(len) AS BIGINT) AS payload_byte_mass,
+        |  CAST(SUM(CASE WHEN len < 128 THEN 1 WHEN len < 16384 THEN 2 ELSE 3 END) AS BIGINT) AS varint_overhead_bytes,
+        |  CAST(MIN(doc_id) AS BIGINT) AS min_doc,
+        |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
+        |FROM t GROUP BY 1 ORDER BY lang""".stripMargin),
 
     // Hedge-delay tuning — service_hedged_requests (Round14Ops) grades
     // ONE policy; the operational question is choosing the delay. Three
@@ -835,7 +1321,7 @@ object Round16Ops extends Family {
     // delay. Graded per delay: >500 ms exceedance before/after, latency
     // masses, extra load — the wave spec asserts the frontier is real
     // (shorter delay buys a smaller tail at strictly more load).
-    "service_hedge_delay_sweep" -> ((s, d) => {
+    Op("service_hedge_delay_sweep", (s, d) => {
       def lat(salt: String) =
         s"""${md5Bits(s"concat('$salt', CAST(k AS STRING))", 6)} % 100 + 50
            | + (CASE WHEN ${md5Bits(s"concat('${salt}t', CAST(k AS STRING))", 6)} % 20 = 0
@@ -855,6 +1341,29 @@ object Round16Ops extends Family {
           sum("hedged").as("hedged_latency_mass"),
           sum(when(col("fired"), 1L).otherwise(0L)).as("extra_load"))
         .orderBy("delay")
+    },
+      {
+      def lat(salt: String) =
+        s"""${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % 100 + 50
+           | + (CASE WHEN ${duckMd5Bits(s"'${salt}t' || CAST(k AS VARCHAR)", 6)} % 20 = 0
+           |    THEN 900 ELSE 0 END)""".stripMargin
+      s"""WITH t AS (
+         |  SELECT k, l1, l2, CAST(v.delay AS BIGINT) AS delay,
+         |    LEAST(l1, l2 + v.delay) AS hedged, l1 > v.delay AS fired
+         |  FROM (
+         |    SELECT CAST(o_orderkey AS BIGINT) AS k,
+         |      ${lat("hl:")} AS l1,
+         |      ${lat("hm:")} AS l2
+         |    FROM orders) q
+         |  CROSS JOIN (VALUES (75), (150), (300)) AS v(delay))
+         |SELECT delay,
+         |  CAST(COUNT(*) AS BIGINT) AS n_requests,
+         |  CAST(SUM(CASE WHEN l1 > 500 THEN 1 ELSE 0 END) AS BIGINT) AS tail_primary,
+         |  CAST(SUM(CASE WHEN hedged > 500 THEN 1 ELSE 0 END) AS BIGINT) AS tail_hedged,
+         |  CAST(SUM(l1) AS BIGINT) AS primary_latency_mass,
+         |  CAST(SUM(hedged) AS BIGINT) AS hedged_latency_mass,
+         |  CAST(SUM(CASE WHEN fired THEN 1 ELSE 0 END) AS BIGINT) AS extra_load
+         |FROM t GROUP BY 1 ORDER BY delay""".stripMargin
     }),
 
     // Biometric score fusion — the multi-modality decision layer an
@@ -866,7 +1375,7 @@ object Round16Ops extends Family {
     // trials — the wave spec asserts fusion dominates the single modality
     // at the operating point (narrower overlap: independent noise
     // averages down). Explode over 5 declared thresholds + rollup.
-    "join_score_fusion" -> ((s, d) => {
+    Op("join_score_fusion", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("genuine", col("k") % 4 === 0)
@@ -900,6 +1409,38 @@ object Round16Ops extends Family {
         .withColumn("face_far_ppm", expr("(face_fa * 1000000) DIV n_imposters"))
         .withColumn("face_frr_ppm", expr("(face_fr * 1000000) DIV n_genuine"))
         .orderBy("tau")
+    },
+      {
+      def score(salt: String, gBase: Int, gW: Int, iW: Int) =
+        s"""CASE WHEN k % 4 = 0
+           | THEN $gBase + ${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $gW
+           | ELSE ${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $iW END""".stripMargin
+      s"""WITH t AS (
+         |  SELECT k, k % 4 = 0 AS genuine, face, voice, doc,
+         |    (3 * face + 2 * voice + doc) // 6 AS fused
+         |  FROM (
+         |    SELECT CAST(c_custkey AS BIGINT) AS k,
+         |      ${score("bf:", 600, 400, 700)} AS face,
+         |      ${score("bv:", 550, 450, 750)} AS voice,
+         |      ${score("bd:", 500, 500, 600)} AS doc
+         |    FROM customer) q),
+         |x AS (SELECT t.*, CAST(v.tau AS BIGINT) AS tau
+         |  FROM t CROSS JOIN (VALUES (400), (500), (550), (600), (650)) AS v(tau)),
+         |g AS (
+         |  SELECT tau,
+         |    CAST(SUM(CASE WHEN NOT genuine THEN 1 ELSE 0 END) AS BIGINT) AS n_imposters,
+         |    CAST(SUM(CASE WHEN genuine THEN 1 ELSE 0 END) AS BIGINT) AS n_genuine,
+         |    CAST(SUM(CASE WHEN NOT genuine AND fused >= tau THEN 1 ELSE 0 END) AS BIGINT) AS fused_fa,
+         |    CAST(SUM(CASE WHEN genuine AND fused < tau THEN 1 ELSE 0 END) AS BIGINT) AS fused_fr,
+         |    CAST(SUM(CASE WHEN NOT genuine AND face >= tau THEN 1 ELSE 0 END) AS BIGINT) AS face_fa,
+         |    CAST(SUM(CASE WHEN genuine AND face < tau THEN 1 ELSE 0 END) AS BIGINT) AS face_fr
+         |  FROM x GROUP BY 1)
+         |SELECT tau, n_imposters, n_genuine, fused_fa, fused_fr, face_fa, face_fr,
+         |  (fused_fa * 1000000) // n_imposters AS fused_far_ppm,
+         |  (fused_fr * 1000000) // n_genuine AS fused_frr_ppm,
+         |  (face_fa * 1000000) // n_imposters AS face_far_ppm,
+         |  (face_fr * 1000000) // n_genuine AS face_frr_ppm
+         |FROM g ORDER BY tau""".stripMargin
     }),
 
     // ISIN checksum — the securities-identifier gate beside IBAN/ABA:
@@ -910,7 +1451,7 @@ object Round16Ops extends Family {
     // D2/D4/…/D14 doubled), check digit derived, 1-in-8 slice corrupts
     // one expansion digit. Luhn detects every single-digit substitution,
     // so the invalid census equals the planted corruption census exactly.
-    "fn_isin_check" -> ((s, d) => {
+    Op("fn_isin_check", (s, d) => {
       // expansion digits D1..D14: country (4), letter (2), 8 md5 digits
       def md(i: Int) =
         s"${md5Bits("concat('is:', CAST(k AS STRING))", 1, i)} % 10"
@@ -953,6 +1494,44 @@ object Round16Ops extends Family {
           sum(when(!col("valid"), 1L).otherwise(0L)).as("n_invalid"),
           sum(when(col("corrupt"), 1L).otherwise(0L)).as("n_corrupted"))
         .orderBy("country")
+    },
+      {
+      def md(i: Int) =
+        s"${duckMd5Bits("'is:' || CAST(k AS VARCHAR)", 1, i)} % 10"
+      val cc = (1 to 4).map(j =>
+        s"(CASE WHEN k % 3 = 0 THEN ${Seq(3, 0, 2, 8)(j - 1)} WHEN k % 3 = 1 THEN ${Seq(1, 6, 1, 1)(j - 1)} ELSE ${Seq(1, 3, 1, 4)(j - 1)} END)")
+      val letter =
+        s"(10 + ${duckMd5Bits("il", "k", 4)} % 26)"
+      val ds: Seq[String] = cc ++ Seq(s"($letter // 10)", s"($letter % 10)") ++
+        (1 to 8).map(i => s"(${md(i)})")
+      def luhn2(e: String) = s"(CASE WHEN 2 * $e > 9 THEN 2 * $e - 9 ELSE 2 * $e END)"
+      val sum14 = ds.zipWithIndex.map { case (e, idx) =>
+        if ((idx + 1) % 2 == 0) luhn2(e) else e
+      }.mkString(" + ")
+      val dorig = ds.zipWithIndex.map { case (e, idx) =>
+        s"WHEN cpos = ${idx + 1} THEN $e"
+      }.mkString("CASE ", " ", " END")
+      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
+         |a AS (
+         |  SELECT k, ($sum14) AS s14, k % 8 = 5 AS corrupt,
+         |    ${duckMd5Bits("ip", "k", 4)} % 14 + 1 AS cpos,
+         |    ${duckMd5Bits("ic", "k", 4)} % 9 + 1 AS cdelta
+         |  FROM t),
+         |b AS (SELECT *, (10 - s14 % 10) % 10 AS chk, ($dorig) AS dorig FROM a),
+         |c AS (SELECT *, (dorig + cdelta) % 10 AS dnew FROM b),
+         |v AS (
+         |  SELECT k, corrupt,
+         |    s14 + chk + CASE WHEN corrupt THEN
+         |      (CASE WHEN cpos % 2 = 0 THEN ${luhn2("dnew")} ELSE dnew END)
+         |      - (CASE WHEN cpos % 2 = 0 THEN ${luhn2("dorig")} ELSE dorig END)
+         |    ELSE 0 END AS s_final
+         |  FROM c)
+         |SELECT CAST(k % 3 AS INT) AS country,
+         |  CAST(COUNT(*) AS BIGINT) AS n_isins,
+         |  CAST(SUM(CASE WHEN s_final % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
+         |  CAST(SUM(CASE WHEN s_final % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
+         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
+         |FROM v GROUP BY 1 ORDER BY country""".stripMargin
     }),
 
     // Wash-trade surveillance — the market-abuse screen an exchange
@@ -963,7 +1542,7 @@ object Round16Ops extends Family {
     // group, 1-in-7 of everything is an exempt transfer — the detected
     // census must equal the planted non-exempt census EXACTLY (the rule
     // is exact, the join is the op). Broadcast registry, linear.
-    "join_wash_trades" -> ((s, d) => {
+    Op("join_wash_trades", (s, d) => {
       val trades = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
@@ -994,7 +1573,36 @@ object Round16Ops extends Family {
             .as("n_planted_live"),
           sum(when(col("wash"), col("cents")).otherwise(0L)).as("wash_cents"))
         .orderBy("symbol")
-    }),
+    },
+      s"""WITH trades AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+        |    o_orderkey % 500 AS acct,
+        |    o_orderkey % 11 = 6 AS wash_plant,
+        |    o_orderkey % 7 = 3 AS itf,
+        |    CASE WHEN o_orderkey % 11 = 6
+        |      THEN (o_orderkey % 500) - (o_orderkey % 500) % 5
+        |        + ${duckMd5Bits("wc", "o_orderkey", 6)} % 5
+        |      ELSE ${duckMd5Bits("wo", "o_orderkey", 6)} % 500
+        |    END AS counter
+        |  FROM orders),
+        |owners AS (
+        |  SELECT DISTINCT CAST(o_orderkey % 500 AS BIGINT) AS acct,
+        |    (o_orderkey % 500) // 5 AS owner
+        |  FROM orders),
+        |j AS (
+        |  SELECT t.*,
+        |    oa.owner = ob.owner AND t.acct <> t.counter AND NOT t.itf AS wash
+        |  FROM trades t
+        |  JOIN owners oa ON oa.acct = t.acct
+        |  JOIN owners ob ON ob.acct = t.counter)
+        |SELECT CAST(k % 4 AS INT) AS symbol,
+        |  CAST(COUNT(*) AS BIGINT) AS n_trades,
+        |  CAST(SUM(CASE WHEN wash THEN 1 ELSE 0 END) AS BIGINT) AS n_wash,
+        |  CAST(SUM(CASE WHEN wash_plant AND NOT itf AND acct <> counter
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_planted_live,
+        |  CAST(SUM(CASE WHEN wash THEN cents ELSE 0 END) AS BIGINT) AS wash_cents
+        |FROM j GROUP BY 1 ORDER BY symbol""".stripMargin),
 
     // Agent-trace audit — the tool-call hygiene screen an LLM-agent
     // pipeline runs over its transcripts: 16 steps per trace, md5 tool
@@ -1004,7 +1612,7 @@ object Round16Ops extends Family {
     // mass. Graded per agent class: traces, loop rate ppm, failure mass,
     // retry-depth mass — the wave spec asserts the loop rate orders with
     // the planted failure rates.
-    "llm_agent_loop_detect" -> ((s, d) => {
+    Op("llm_agent_loop_detect", (s, d) => {
       val steps = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 3).cast("int"))
@@ -1035,7 +1643,40 @@ object Round16Ops extends Family {
           sum("max_run").as("retry_depth_mass"))
         .withColumn("stuck_ppm", expr("(n_stuck * 1000000) DIV n_traces"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH steps AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    CAST(o_orderkey % 3 AS INT) AS cls, g.i,
+        |    ${duckMd5Bits("'tc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(g.i AS VARCHAR)", 6)} % 10
+        |      >= 7 - 2 * (o_orderkey % 3) AS fail
+        |  FROM orders, generate_series(0, 15) AS g(i)),
+        |f AS (
+        |  SELECT k, cls, i,
+        |    SUM(CASE WHEN fail THEN 1 ELSE 0 END) OVER (
+        |      PARTITION BY k ORDER BY i
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS failseq
+        |  FROM steps WHERE fail),
+        |r AS (
+        |  SELECT k, cls, MAX(run_len) AS max_run, SUM(run_len) AS n_fails
+        |  FROM (
+        |    SELECT k, cls, i - failseq AS grp, CAST(COUNT(*) AS BIGINT) AS run_len
+        |    FROM f GROUP BY k, cls, i - failseq) q
+        |  GROUP BY 1, 2),
+        |per AS (
+        |  SELECT t.k, t.cls,
+        |    coalesce(r.max_run, 0) AS max_run, coalesce(r.n_fails, 0) AS n_fails
+        |  FROM (SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |      CAST(o_orderkey % 3 AS INT) AS cls FROM orders) t
+        |  LEFT JOIN r ON r.k = t.k),
+        |g2 AS (
+        |  SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_traces,
+        |    CAST(SUM(CASE WHEN max_run >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_stuck,
+        |    CAST(SUM(n_fails) AS BIGINT) AS fail_mass,
+        |    CAST(SUM(max_run) AS BIGINT) AS retry_depth_mass
+        |  FROM per GROUP BY 1)
+        |SELECT cls, n_traces, n_stuck, fail_mass, retry_depth_mass,
+        |  (n_stuck * 1000000) // n_traces AS stuck_ppm
+        |FROM g2 ORDER BY cls""".stripMargin),
 
     // Dataset cartography — the training-dynamics map (mean confidence ×
     // variability over epochs) a data-curation pipeline uses to split a
@@ -1048,7 +1689,7 @@ object Round16Ops extends Family {
     // samples σ≈43, the ambiguous one σ≈173 — 120 splits them). Graded as the
     // planted-class × region confusion census — the wave spec asserts
     // diagonal dominance (the map actually separates the plants).
-    "llm_dataset_cartography" -> ((s, d) => {
+    Op("llm_dataset_cartography", (s, d) => {
       val per = Tables.documents(s, d)
         .select(col("doc_id").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 3).cast("int"))
@@ -1073,6 +1714,38 @@ object Round16Ops extends Family {
           sum("mean_conf").as("mean_conf_mass"),
           sum("variability").as("variability_mass"))
         .orderBy("cls", "region")
+    },
+      {
+      val isq = Round12cOps.duckIsqrt("8 * qc - sc * sc")
+      s"""WITH obs AS (
+         |  SELECT k, cls, e,
+         |    CASE WHEN k % 3 = 0
+         |      THEN 800 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 150
+         |      WHEN k % 3 = 2
+         |      THEN 100 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 150
+         |      ELSE 200 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 600
+         |    END AS conf
+         |  FROM (SELECT CAST(doc_id AS BIGINT) AS k,
+         |      CAST(doc_id % 3 AS INT) AS cls FROM documents) q,
+         |    generate_series(0, 7) AS g(e)),
+         |per AS (
+         |  SELECT k, cls, CAST(SUM(conf) AS BIGINT) AS sc,
+         |    CAST(SUM(conf * conf) AS BIGINT) AS qc
+         |  FROM obs GROUP BY 1, 2),
+         |m AS (
+         |  SELECT k, cls, sc // 8 AS mean_conf, $isq // 8 AS variability
+         |  FROM per),
+         |r AS (
+         |  SELECT cls,
+         |    CASE WHEN mean_conf < 300 THEN 'hard'
+         |      WHEN variability >= 120 THEN 'ambiguous'
+         |      ELSE 'easy' END AS region,
+         |    mean_conf, variability
+         |  FROM m)
+         |SELECT cls, region, CAST(COUNT(*) AS BIGINT) AS n_examples,
+         |  CAST(SUM(mean_conf) AS BIGINT) AS mean_conf_mass,
+         |  CAST(SUM(variability) AS BIGINT) AS variability_mass
+         |FROM r GROUP BY 1, 2 ORDER BY cls, region""".stripMargin
     }),
 
     // Backpressure / bounded-queue admission — the token-bucket shape a
@@ -1084,7 +1757,7 @@ object Round16Ops extends Family {
     // oracle as chained CTEs. Graded per class: drop mass, peak depth
     // mass, windows spent above the 300 high-water mark — the wave spec
     // asserts only the over-capacity class drops.
-    "service_backpressure" -> ((s, d) => {
+    Op("service_backpressure", (s, d) => {
       val obs = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
         .withColumn("cls", (col("m") % 3).cast("int"))
@@ -1105,6 +1778,30 @@ object Round16Ops extends Family {
           sum(expr((0 to 23).map(t => s"(CASE WHEN q$t > 300 THEN 1 ELSE 0 END)")
             .mkString(" + "))).as("high_water_windows"))
         .orderBy("cls")
+    },
+      {
+      val bpMap: Map[String, String] = backpressureCols.toMap
+      val stepCtes = (0 to 23).map { t =>
+        val from = if (t == 0) "wide" else s"bp${t - 1}"
+        s"bp$t AS (SELECT *, ${bpMap(s"r$t")} AS r$t, " +
+          s"${bpMap(s"d$t")} AS d$t, ${bpMap(s"q$t")} AS q$t FROM $from)"
+      }.mkString(",\n")
+      s"""WITH obs AS (
+         |  SELECT m, cls, t,
+         |    55 + 25 * cls + ${duckMd5Bits("'bp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 51 AS a
+         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
+         |      CAST(s_suppkey % 3 AS INT) AS cls FROM supplier) q,
+         |    generate_series(0, 23) AS g(t)),
+         |wide AS (
+         |  SELECT m, cls,
+         |${(0 to 23).map(t => s"    MAX(CASE WHEN t = $t THEN a END) AS a$t").mkString(",\n")}
+         |  FROM obs GROUP BY 1, 2),
+         |$stepCtes
+         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_services,
+         |  CAST(SUM(${(0 to 23).map(t => s"d$t").mkString(" + ")}) AS BIGINT) AS drop_mass,
+         |  CAST(SUM(${(0 to 23).map(t => s"q$t").mkString("GREATEST(", ", ", ")")}) AS BIGINT) AS peak_depth_mass,
+         |  CAST(SUM(${(0 to 23).map(t => s"(CASE WHEN q$t > 300 THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS high_water_windows
+         |FROM bp23 GROUP BY 1 ORDER BY cls""".stripMargin
     }),
 
     // Device-fingerprint linking — the identity signal a person-service
@@ -1118,7 +1815,7 @@ object Round16Ops extends Family {
     // fingerprints, linkable pairs, hot-excluded accounts; the spec
     // asserts every planted ring pair is found and the default
     // fingerprint yields zero.
-    "join_device_fingerprint" -> ((s, d) => {
+    Op("join_device_fingerprint", (s, d) => {
       val acct = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("fp", expr(
@@ -1146,7 +1843,37 @@ object Round16Ops extends Family {
           coalesce(col("n_ring_pairs"), lit(0L)).as("n_ring_pairs"),
           coalesce(col("n_linking_fps"), lit(0L)).as("n_linking_fps"))
         .orderBy("cohort")
-    }),
+    },
+      """WITH acct AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    CASE WHEN c_custkey % 15 = 7 THEN 'default_fp'
+        |      WHEN c_custkey % 9 = 4 THEN 'ring_' || CAST(c_custkey // 27 AS VARCHAR)
+        |      ELSE 'uniq_' || substring(md5('fp:' || CAST(c_custkey AS VARCHAR)), 1, 10)
+        |    END AS fp
+        |  FROM customer),
+        |pops AS (SELECT fp, COUNT(*) AS pop FROM acct GROUP BY 1),
+        |live AS (SELECT a.k, a.fp FROM acct a JOIN pops p ON p.fp = a.fp
+        |  WHERE p.pop <= 5),
+        |pairs AS (
+        |  SELECT x.fp, x.k AS a, y.k AS b
+        |  FROM live x JOIN live y ON x.fp = y.fp AND x.k < y.k),
+        |pc AS (
+        |  SELECT CAST(a % 2 AS INT) AS cohort,
+        |    CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        |    CAST(SUM(CASE WHEN fp LIKE 'ring!_%' ESCAPE '!' THEN 1 ELSE 0 END) AS BIGINT) AS n_ring_pairs,
+        |    CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_linking_fps
+        |  FROM pairs GROUP BY 1),
+        |ac AS (
+        |  SELECT CAST(k % 2 AS INT) AS cohort,
+        |    CAST(COUNT(*) AS BIGINT) AS n_accounts,
+        |    CAST(SUM(CASE WHEN k % 15 = 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_default_fp
+        |  FROM acct GROUP BY 1)
+        |SELECT ac.cohort, ac.n_accounts, ac.n_default_fp,
+        |  CAST(coalesce(pc.n_pairs, 0) AS BIGINT) AS n_pairs,
+        |  CAST(coalesce(pc.n_ring_pairs, 0) AS BIGINT) AS n_ring_pairs,
+        |  CAST(coalesce(pc.n_linking_fps, 0) AS BIGINT) AS n_linking_fps
+        |FROM ac LEFT JOIN pc ON pc.cohort = ac.cohort
+        |ORDER BY ac.cohort""".stripMargin),
 
     // Bech32 (BIP-173) checksum — the segwit-address validation gate: 12
     // md5 5-bit groups folded through the polymod LFSR (state transition
@@ -1158,7 +1885,7 @@ object Round16Ops extends Family {
     // planted corruption census exactly. 24 unrolled steps as one wide
     // codegen'd projection; DuckDB replays via chained CTEs with xor()
     // (its ^ is POWER — the dialect split lives in the generator).
-    "fn_bech32_check" -> ((s, d) => {
+    Op("fn_bech32_check", (s, d) => {
       val hrpState = bech32Fold(1L, Seq(3L, 3L, 0L, 2L, 3L))
       def grp(j: Int) =
         s"${md5Bits("concat('bw:', CAST(k AS STRING))", 2, 2 * j + 1)} % 32"
@@ -1189,6 +1916,40 @@ object Round16Ops extends Family {
           sum(when(col("corrupt"), 1L).otherwise(0L)).as("n_corrupted"),
           sum("c11").as("checksum_state_mass"))
         .orderBy("cohort")
+    },
+      {
+      val hrpState = bech32Fold(1L, Seq(3L, 3L, 0L, 2L, 3L))
+      def grp(j: Int) =
+        s"${duckMd5Bits("'bw:' || CAST(k AS VARCHAR)", 2, 2 * j + 1)} % 32"
+      val dx: (String, String) => String = (a, b) => s"xor($a, $b)"
+      val dl: (String, Int) => String = (e, n) => s"($e << $n)"
+      val dr: (String, Int) => String = (e, n) => s"($e >> $n)"
+      val init = s"CAST($hrpState AS BIGINT)"
+      val cSteps = bech32Steps("c", init, (0 until 12).map(j => s"g$j"), dx, dl, dr)
+      val xSteps = bech32Steps("x", init, (0 until 12).map(j => s"xg$j"), dx, dl, dr)
+      val stepCtes = (0 until 12).map { i =>
+        val from = if (i == 0) "base" else s"bc${i - 1}"
+        s"bc$i AS (SELECT *, ${cSteps(i)._2} AS c$i, ${xSteps(i)._2} AS x$i FROM $from)"
+      }.mkString(",\n")
+      s"""WITH t AS (
+         |  SELECT CAST(c_custkey AS BIGINT) AS k,
+         |    c_custkey % 5 = 2 AS corrupt,
+         |    ${duckMd5Bits("bp", "c_custkey", 4)} % 12 AS cpos,
+         |    ${duckMd5Bits("bd", "c_custkey", 4)} % 31 + 1 AS cdelta
+         |  FROM customer),
+         |base AS (
+         |  SELECT *,
+         |${(0 until 12).map(j => s"    ${grp(j)} AS g$j").mkString(",\n")},
+         |${(0 until 12).map(j => s"    CASE WHEN corrupt AND cpos = $j THEN ((${grp(j)}) + cdelta) % 32 ELSE ${grp(j)} END AS xg$j").mkString(",\n")}
+         |  FROM t),
+         |$stepCtes
+         |SELECT CAST(k % 3 AS INT) AS cohort,
+         |  CAST(COUNT(*) AS BIGINT) AS n_addresses,
+         |  CAST(SUM(CASE WHEN c11 = x11 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
+         |  CAST(SUM(CASE WHEN c11 <> x11 THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
+         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted,
+         |  CAST(SUM(c11) AS BIGINT) AS checksum_state_mass
+         |FROM bc11 GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // Hawkes-style self-exciting intensity — the burst detector an AML
@@ -1204,7 +1965,7 @@ object Round16Ops extends Family {
     // Graded per class: flagged windows, peak intensity mass, intensity
     // mass — the spec asserts only the burst class trips the flag in the
     // burst window and intensity decays back below threshold by t=20.
-    "agg_hawkes_decay" -> ((s, d) => {
+    Op("agg_hawkes_decay", (s, d) => {
       val obs = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("m"))
         .withColumn("cls", (col("m") % 3).cast("int"))
@@ -1226,6 +1987,31 @@ object Round16Ops extends Family {
             .as("intensity_mass"),
           sum(expr("CASE WHEN lam20 > 2500 THEN 1 ELSE 0 END")).as("still_hot_t20"))
         .orderBy("cls")
+    },
+      {
+      val hkMap: Map[String, String] = hawkesCols("//").toMap
+      val stepCtes = (0 to 23).map { t =>
+        val from = if (t == 0) "wide" else s"hk${t - 1}"
+        s"hk$t AS (SELECT *, ${hkMap(s"le$t")} AS le$t, ${hkMap(s"lam$t")} AS lam$t FROM $from)"
+      }.mkString(",\n")
+      s"""WITH obs AS (
+         |  SELECT m, cls, t,
+         |    ${duckMd5Bits("'hk:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3
+         |      + (CASE WHEN m % 3 = 2 AND t BETWEEN 8 AND 10 THEN 4 ELSE 0 END) AS n
+         |  FROM (SELECT CAST(c_custkey AS BIGINT) AS m,
+         |      CAST(c_custkey % 3 AS INT) AS cls FROM customer) q,
+         |    generate_series(0, 23) AS g(t)),
+         |wide AS (
+         |  SELECT m, cls,
+         |${(0 to 23).map(t => s"    MAX(CASE WHEN t = $t THEN n END) AS n$t").mkString(",\n")}
+         |  FROM obs GROUP BY 1, 2),
+         |$stepCtes
+         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_accounts,
+         |  CAST(SUM(${(0 to 23).map(t => s"(CASE WHEN lam$t > 2500 THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS flagged_windows,
+         |  CAST(SUM(${(0 to 23).map(t => s"lam$t").mkString("GREATEST(", ", ", ")")}) AS BIGINT) AS peak_intensity_mass,
+         |  CAST(SUM(${(0 to 23).map(t => s"lam$t").mkString(" + ")}) AS BIGINT) AS intensity_mass,
+         |  CAST(SUM(CASE WHEN lam20 > 2500 THEN 1 ELSE 0 END) AS BIGINT) AS still_hot_t20
+         |FROM hk23 GROUP BY 1 ORDER BY cls""".stripMargin
     }),
 
     // 1:1 propensity matching with a bucket caliper — the causal-cohort
@@ -1237,7 +2023,7 @@ object Round16Ops extends Family {
     // loop. Graded: group sizes, matched pairs, score sums all/matched —
     // the spec asserts matching shrinks the mean-score gap (the balance
     // property that makes the downstream outcome diff causal).
-    "join_propensity_match" -> ((s, d) => {
+    Op("join_propensity_match", (s, d) => {
       val units = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("score", expr(
@@ -1265,7 +2051,43 @@ object Round16Ops extends Family {
         .select("n_treated", "n_control", "n_matched",
           "score_treated_all", "score_control_all",
           "score_treated_matched", "score_control_matched")
-    }),
+    },
+      s"""WITH units AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    300000 + (c_custkey % 7) * 50000
+        |      + ${duckMd5Bits("ps", "c_custkey", 6)} % 100000 AS score
+        |  FROM customer),
+        |u2 AS (
+        |  SELECT k, score,
+        |    ${duckMd5Bits("pt", "k", 6)} % 1000
+        |      < 100 + score // 2000 AS treated,
+        |    score // 20000 AS bucket
+        |  FROM units),
+        |ranked AS (
+        |  SELECT *, ROW_NUMBER() OVER (
+        |    PARTITION BY bucket, treated ORDER BY score, k) AS rn
+        |  FROM u2),
+        |matched AS (
+        |  SELECT t.score AS ts, c.score AS cs
+        |  FROM ranked t JOIN ranked c
+        |    ON t.bucket = c.bucket AND t.rn = c.rn
+        |    AND t.treated AND NOT c.treated),
+        |a AS (
+        |  SELECT
+        |    CAST(SUM(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT) AS n_treated,
+        |    CAST(SUM(CASE WHEN NOT treated THEN 1 ELSE 0 END) AS BIGINT) AS n_control,
+        |    CAST(SUM(CASE WHEN treated THEN score ELSE 0 END) AS BIGINT) AS score_treated_all,
+        |    CAST(SUM(CASE WHEN NOT treated THEN score ELSE 0 END) AS BIGINT) AS score_control_all
+        |  FROM u2),
+        |m AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_matched,
+        |    CAST(coalesce(SUM(ts), 0) AS BIGINT) AS score_treated_matched,
+        |    CAST(coalesce(SUM(cs), 0) AS BIGINT) AS score_control_matched
+        |  FROM matched)
+        |SELECT a.n_treated, a.n_control, m.n_matched,
+        |  a.score_treated_all, a.score_control_all,
+        |  m.score_treated_matched, m.score_control_matched
+        |FROM a, m""".stripMargin),
 
     // Write-audit-publish — the staging gate a lakehouse ingestion runs:
     // each batch lands on a STAGING path, an audit pass checks it (row
@@ -1275,7 +2097,7 @@ object Round16Ops extends Family {
     // batch B plants a 12% null spike and must be rejected. Graded: both
     // audit ledgers plus the final live census, which must equal base +
     // A exactly — the quarantined B rows are nowhere in the live files.
-    "warehouse_write_audit_publish" -> ((s, d) => {
+    Op("warehouse_write_audit_publish", (s, d) => {
       val base = Tables.orders(s, d).where(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey").cast("bigint").as("k"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
@@ -1313,7 +2135,30 @@ object Round16Ops extends Family {
         .select(lit("live_final").as("batch"), col("n_rows"),
           col("n_nulls"), lit(0L).as("null_ppm"), lit(true).as("published"))
       la.unionByName(lb).unionByName(live).orderBy("batch")
-    }),
+    },
+      s"""WITH a AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(0 AS BIGINT) AS n_nulls
+        |  FROM orders WHERE o_orderkey % 3 = 1),
+        |b AS (
+        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+        |    CAST(SUM(CASE WHEN ${duckMd5Bits("wb", "o_orderkey", 6)} % 100 < 12
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls
+        |  FROM orders WHERE o_orderkey % 3 = 2),
+        |base AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM orders WHERE o_orderkey % 3 = 0)
+        |SELECT * FROM (
+        |  SELECT 'a' AS batch, a.n_rows, a.n_nulls,
+        |    (a.n_nulls * 1000000) // a.n_rows AS null_ppm,
+        |    a.n_rows > 0 AND a.n_nulls * 100 <= a.n_rows * 5 AS published
+        |  FROM a
+        |  UNION ALL
+        |  SELECT 'b', b.n_rows, b.n_nulls, (b.n_nulls * 1000000) // b.n_rows,
+        |    b.n_rows > 0 AND b.n_nulls * 100 <= b.n_rows * 5
+        |  FROM b
+        |  UNION ALL
+        |  SELECT 'live_final', base.n_rows + a.n_rows, CAST(0 AS BIGINT),
+        |    CAST(0 AS BIGINT), TRUE
+        |  FROM base, a) q
+        |ORDER BY batch""".stripMargin),
 
     // Bass diffusion forward model — the adoption forecast a
     // go-to-market planner runs: N' = N + (p·(M−N) + q·N·(M−N) DIV M)
@@ -1324,7 +2169,7 @@ object Round16Ops extends Family {
     // single-period adoption, time-to-half-market — the spec asserts the
     // innovator class starts faster while the imitator class shows the
     // S-curve (later half-market crossing, higher peak period).
-    "agg_bass_diffusion" -> ((s, d) => {
+    Op("agg_bass_diffusion", (s, d) => {
       val mkts = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
         .withColumn("cls", (col("m") % 3).cast("int"))
@@ -1340,6 +2185,25 @@ object Round16Ops extends Family {
           sum(expr((0 to 23).map(t => s"(CASE WHEN nn$t < 500000 THEN 1 ELSE 0 END)")
             .mkString(" + "))).as("periods_below_half_mass"))
         .orderBy("cls")
+    },
+      {
+      val bMap: Map[String, String] = bassCols("//").toMap
+      val stepCtes = (0 to 23).map { t =>
+        val from = if (t == 0) "mkts" else s"bs${t - 1}"
+        s"bs$t AS (SELECT *, ${bMap(s"nn$t")} AS nn$t FROM $from)"
+      }.mkString(",\n")
+      s"""WITH mkts AS (
+         |  SELECT CAST(s_suppkey AS BIGINT) AS m,
+         |    CAST(s_suppkey % 3 AS INT) AS cls,
+         |    CASE WHEN s_suppkey % 3 = 0 THEN 30 WHEN s_suppkey % 3 = 1 THEN 5 ELSE 15 END AS p,
+         |    CASE WHEN s_suppkey % 3 = 0 THEN 100 WHEN s_suppkey % 3 = 1 THEN 500 ELSE 300 END AS q
+         |  FROM supplier),
+         |$stepCtes
+         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_markets,
+         |  CAST(SUM(nn23) AS BIGINT) AS final_adopters_mass,
+         |  CAST(SUM(${(1 to 23).map(t => s"(nn$t - nn${t - 1})").mkString("GREATEST(", ", ", ")")}) AS BIGINT) AS peak_adoption_mass,
+         |  CAST(SUM(${(0 to 23).map(t => s"(CASE WHEN nn$t < 500000 THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS periods_below_half_mass
+         |FROM bs23 GROUP BY 1 ORDER BY cls""".stripMargin
     }),
 
     // NHS-number mod-11 checksum — the healthcare-id gate in the
@@ -1349,7 +2213,7 @@ object Round16Ops extends Family {
     // censused here as their own class). A 1-in-7 slice of issuable
     // numbers corrupts one digit; 11 is prime so every weighted single
     // substitution is caught: invalid census == planted census.
-    "fn_nhs_number" -> ((s, d) => {
+    Op("fn_nhs_number", (s, d) => {
       def dig(i: Int) =
         s"${md5Bits("concat('nh:', CAST(k AS STRING))", 1, i)} % 10"
       val wsum = (1 to 9).map(i => s"(${dig(i)}) * ${11 - i}").mkString(" + ")
@@ -1377,6 +2241,35 @@ object Round16Ops extends Family {
             .as("n_invalid"),
           sum(when(col("corrupt"), 1L).otherwise(0L)).as("n_corrupted"))
         .orderBy("cohort")
+    },
+      {
+      def dig(i: Int) =
+        s"${duckMd5Bits("'nh:' || CAST(k AS VARCHAR)", 1, i)} % 10"
+      val wsum = (1 to 9).map(i => s"(${dig(i)}) * ${11 - i}").mkString(" + ")
+      val wdelta = (1 to 9).map(i => s"WHEN cpos = $i THEN ${11 - i} * cdelta")
+        .mkString("CASE ", " ", " END")
+      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
+         |a AS (
+         |  SELECT k, ($wsum) % 11 AS r,
+         |    ${duckMd5Bits("np", "k", 4)} % 9 + 1 AS cpos,
+         |    ${duckMd5Bits("nd", "k", 4)} % 9 + 1 AS cdelta
+         |  FROM t),
+         |b AS (
+         |  SELECT k, r = 1 AS unissuable, (11 - r) % 11 AS chk,
+         |    r <> 1 AND k % 7 = 2 AS corrupt, cpos, cdelta, ($wdelta) AS wdelta
+         |  FROM a),
+         |v AS (
+         |  SELECT k, unissuable, corrupt,
+         |    NOT unissuable AND
+         |      (($wsum) + chk + CASE WHEN corrupt THEN wdelta ELSE 0 END) % 11 = 0 AS valid
+         |  FROM b)
+         |SELECT CAST(k % 4 AS INT) AS cohort,
+         |  CAST(COUNT(*) AS BIGINT) AS n_numbers,
+         |  CAST(SUM(CASE WHEN unissuable THEN 1 ELSE 0 END) AS BIGINT) AS n_unissuable,
+         |  CAST(SUM(CASE WHEN valid THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
+         |  CAST(SUM(CASE WHEN NOT valid AND NOT unissuable THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
+         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
+         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // MoE capacity-factor token dropping — llm_moe_balance grades router
@@ -1389,7 +2282,7 @@ object Round16Ops extends Family {
     // rerouted + dropped == tokens is graded per expert alongside the
     // loads — the spec asserts only the hot expert drops and the drop
     // mass matches its overflow minus successful reroutes.
-    "llm_moe_capacity_drop" -> ((s, d) => {
+    Op("llm_moe_capacity_drop", (s, d) => {
       val toks = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("batch", expr("k DIV 256"))
@@ -1424,7 +2317,35 @@ object Round16Ops extends Family {
           sum(when(col("outcome") === "rerouted", 1L).otherwise(0L)).as("n_rerouted_out"),
           sum(when(col("outcome") === "dropped", 1L).otherwise(0L)).as("n_dropped"))
         .orderBy("e1")
-    }),
+    },
+      s"""WITH toks AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey // 256 AS batch,
+        |    CASE WHEN ${duckMd5Bits("me", "o_orderkey", 6)} % 10 < 3
+        |      THEN CAST(0 AS BIGINT)
+        |      ELSE ${duckMd5Bits("m1", "o_orderkey", 6)} % 8 END AS e1,
+        |    ${duckMd5Bits("m2", "o_orderkey", 6)} % 8 AS e2x
+        |  FROM orders),
+        |t2 AS (SELECT *, CASE WHEN e2x = e1 THEN (e2x + 1) % 8 ELSE e2x END AS e2 FROM toks),
+        |bs AS (SELECT batch, COUNT(*) AS bn, (COUNT(*) * 125) // (8 * 100) + 1 AS cap
+        |  FROM t2 GROUP BY 1),
+        |ranked AS (
+        |  SELECT t2.*, bs.cap,
+        |    ROW_NUMBER() OVER (PARTITION BY t2.batch, t2.e1
+        |      ORDER BY md5('mo:' || CAST(t2.k AS VARCHAR)), t2.k) AS rn
+        |  FROM t2 JOIN bs ON bs.batch = t2.batch),
+        |pl AS (SELECT batch AS b2, e1 AS pe, CAST(COUNT(*) AS BIGINT) AS pload
+        |  FROM ranked GROUP BY 1, 2),
+        |routed AS (
+        |  SELECT r.e1,
+        |    CASE WHEN r.rn <= r.cap THEN 'admitted'
+        |      WHEN coalesce(pl.pload, 0) < r.cap THEN 'rerouted'
+        |      ELSE 'dropped' END AS outcome
+        |  FROM ranked r LEFT JOIN pl ON pl.b2 = r.batch AND pl.pe = r.e2)
+        |SELECT e1, CAST(COUNT(*) AS BIGINT) AS primary_tokens,
+        |  CAST(SUM(CASE WHEN outcome = 'admitted' THEN 1 ELSE 0 END) AS BIGINT) AS n_admitted,
+        |  CAST(SUM(CASE WHEN outcome = 'rerouted' THEN 1 ELSE 0 END) AS BIGINT) AS n_rerouted_out,
+        |  CAST(SUM(CASE WHEN outcome = 'dropped' THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
+        |FROM routed GROUP BY 1 ORDER BY e1""".stripMargin),
 
     // Counter-rollover correction — the uint24 wrap every metrics
     // pipeline must undo (network byte counters, energy meters): planted
@@ -1433,7 +2354,7 @@ object Round16Ops extends Family {
     // law is graded EXACTLY: Σ deltas == true cumulative growth (every
     // wrap undone — one missed wrap shifts the mass by 2²⁴), wraps
     // census == planted wrap count. Per device-class rollup.
-    "fn_counter_rollover" -> ((s, d) => {
+    Op("fn_counter_rollover", (s, d) => {
       val wOrd = Window.partitionBy("m").orderBy("t")
       val obs = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
@@ -1460,7 +2381,38 @@ object Round16Ops extends Family {
             .as("n_exact"),
           sum("n_wraps").as("wrap_mass"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH obs AS (
+        |  SELECT m, cls, t,
+        |    (1 + m % 3) * (${duckMd5Bits("'cr:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3000000) AS inc
+        |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
+        |      CAST(s_suppkey % 3 AS INT) AS cls FROM supplier) q,
+        |    generate_series(0, 23) AS g(t)),
+        |c AS (
+        |  SELECT m, cls, t,
+        |    CAST(SUM(inc) OVER (PARTITION BY m ORDER BY t
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+        |  FROM obs),
+        |r AS (
+        |  SELECT m, cls, cum, cum % 16777216 AS reading,
+        |    LAG(cum % 16777216, 1) OVER (PARTITION BY m ORDER BY t) AS prev
+        |  FROM c),
+        |x AS (
+        |  SELECT m, cls, cum,
+        |    (reading - prev + 16777216) % 16777216 AS delta,
+        |    CASE WHEN reading < prev THEN 1 ELSE 0 END AS wrap
+        |  FROM r),
+        |per AS (
+        |  SELECT m, cls, CAST(SUM(delta) AS BIGINT) AS recon_growth,
+        |    CAST(MAX(cum) - MIN(cum) AS BIGINT) AS true_growth,
+        |    CAST(SUM(wrap) AS BIGINT) AS n_wraps
+        |  FROM x GROUP BY 1, 2)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_devices,
+        |  CAST(SUM(recon_growth) AS BIGINT) AS recon_mass,
+        |  CAST(SUM(true_growth) AS BIGINT) AS true_mass,
+        |  CAST(SUM(CASE WHEN recon_growth = true_growth THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
+        |  CAST(SUM(n_wraps) AS BIGINT) AS wrap_mass
+        |FROM per GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Data-contract check — the schema/domain gate a landing feed passes
     // before merge: the orders stream with three PLANTED violation
@@ -1470,7 +2422,7 @@ object Round16Ops extends Family {
     // Graded per rule: violations == the planted census exactly, plus
     // the overall pass verdict each rule's threshold implies. One scan +
     // one key rollup.
-    "warehouse_data_contract" -> ((s, d) => {
+    Op("warehouse_data_contract", (s, d) => {
       val feed = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"),
           col("o_orderstatus").as("status0"),
@@ -1496,7 +2448,31 @@ object Round16Ops extends Family {
       enumViol.unionByName(rangeViol).unionByName(dupViol).unionByName(total)
         .withColumn("passed", col("n_violations") === 0L)
         .orderBy("rule")
-    }),
+    },
+      """WITH feed AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    CASE WHEN o_orderkey % 97 = 5 THEN 'X' ELSE o_orderstatus END AS status,
+        |    CASE WHEN o_orderkey % 89 = 7
+        |      THEN -CAST(ROUND(o_totalprice * 100) AS BIGINT)
+        |      ELSE CAST(ROUND(o_totalprice * 100) AS BIGINT) END AS cents
+        |  FROM orders),
+        |landed AS (
+        |  SELECT * FROM feed
+        |  UNION ALL SELECT * FROM feed WHERE k % 101 = 9),
+        |kc AS (SELECT k, COUNT(*) AS n FROM landed GROUP BY 1),
+        |rules AS (
+        |  SELECT 'key_unique' AS rule,
+        |    CAST(coalesce((SELECT SUM(n - 1) FROM kc WHERE n > 1), 0) AS BIGINT) AS n_violations
+        |  UNION ALL
+        |  SELECT 'price_positive',
+        |    (SELECT CAST(SUM(CASE WHEN cents <= 0 THEN 1 ELSE 0 END) AS BIGINT) FROM landed)
+        |  UNION ALL
+        |  SELECT 'rows_landed', (SELECT CAST(COUNT(*) AS BIGINT) FROM landed)
+        |  UNION ALL
+        |  SELECT 'status_enum',
+        |    (SELECT CAST(SUM(CASE WHEN status NOT IN ('O', 'F', 'P') THEN 1 ELSE 0 END) AS BIGINT) FROM landed))
+        |SELECT rule, n_violations, n_violations = 0 AS passed
+        |FROM rules ORDER BY rule""".stripMargin),
 
     // OFAC 50%-rule ownership cascade — the sanctions-exposure screen a
     // KYC service runs over an ownership DAG: sanctioned roots (k%50=0),
@@ -1508,7 +2484,7 @@ object Round16Ops extends Family {
     // children of blocked level-1 parents are blocked even though the
     // multiplied-through exposure (48%) is not. Graded per level class:
     // entities, blocked census, blocked-ownership mass.
-    "join_ownership_sanctions" -> ((s, d) => {
+    Op("join_ownership_sanctions", (s, d) => {
       val ents = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("lvl", expr(
@@ -1538,7 +2514,34 @@ object Round16Ops extends Family {
         .agg(count(lit(1)).as("n_entities"),
           sum(when(col("isb"), 1L).otherwise(0L)).as("n_blocked"))
         .orderBy("lvl")
-    }),
+    },
+      """WITH ents AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    CASE WHEN c_custkey % 50 = 0 THEN 0 WHEN c_custkey % 50 = 1 THEN 1
+        |      WHEN c_custkey % 50 = 2 THEN 2 ELSE 9 END AS lvl
+        |  FROM customer),
+        |edges AS (
+        |  SELECT k AS child, k - 1 AS owner,
+        |    CASE WHEN k % 100 = 1 THEN 60 ELSE 40 END AS pct
+        |  FROM ents WHERE lvl = 1
+        |  UNION ALL SELECT k, k - 1, 80 FROM ents WHERE lvl = 2),
+        |blk0 AS (SELECT k FROM ents WHERE lvl = 0),
+        |n1 AS (SELECT child AS k FROM edges
+        |  JOIN blk0 ON blk0.k = edges.owner
+        |  GROUP BY child HAVING SUM(pct) >= 50),
+        |blk1 AS (SELECT k FROM blk0 UNION SELECT k FROM n1),
+        |n2 AS (SELECT child AS k FROM edges
+        |  JOIN blk1 ON blk1.k = edges.owner
+        |  GROUP BY child HAVING SUM(pct) >= 50),
+        |blk2 AS (SELECT k FROM blk1 UNION SELECT k FROM n2),
+        |n3 AS (SELECT child AS k FROM edges
+        |  JOIN blk2 ON blk2.k = edges.owner
+        |  GROUP BY child HAVING SUM(pct) >= 50),
+        |blk3 AS (SELECT k FROM blk2 UNION SELECT k FROM n3)
+        |SELECT lvl, CAST(COUNT(*) AS BIGINT) AS n_entities,
+        |  CAST(SUM(CASE WHEN b.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked
+        |FROM ents e LEFT JOIN blk3 b ON b.k = e.k
+        |GROUP BY 1 ORDER BY lvl""".stripMargin),
 
     // Time-respecting reachability — the layering trace an AML monitor
     // follows (funds hop a→b→c only along INCREASING timestamps within a
@@ -1550,7 +2553,7 @@ object Round16Ops extends Family {
     // per-hop path censuses and completed planted chains (every planted
     // chain must be found; background accidentals are the honest
     // surplus).
-    "join_temporal_reachability" -> ((s, d) => {
+    Op("join_temporal_reachability", (s, d) => {
       val e = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("t"))
         .withColumn("planted", col("t") % 90 < 3)
@@ -1593,7 +2596,27 @@ object Round16Ops extends Family {
         .crossJoin(broadcast(nChains))
         .select("n_2hop_paths", "n_3hop_paths", "n_chain_completions",
           "n_planted_starts")
-    }),
+    },
+      s"""WITH e AS (
+        |  SELECT
+        |    CASE WHEN t % 90 < 3 THEN ((t // 90) * 10) % 1000 + (t % 90)
+        |      ELSE ${duckMd5Bits("ts", "t", 6)} % 1000 END AS src,
+        |    CASE WHEN t % 90 < 3 THEN ((t // 90) * 10) % 1000 + (t % 90) + 1
+        |      ELSE ${duckMd5Bits("td", "t", 6)} % 1000 END AS dst,
+        |    t
+        |  FROM (SELECT CAST(o_orderkey AS BIGINT) AS t FROM orders) q0),
+        |e2 AS (SELECT * FROM e WHERE src <> dst),
+        |h2 AS (
+        |  SELECT a.src AS s, a.t AS t1, b.dst AS mid2, b.t AS t2
+        |  FROM e2 a JOIN e2 b ON b.src = a.dst AND b.t > a.t AND b.t <= a.t + 5),
+        |h3 AS (
+        |  SELECT h2.s, c.dst AS d3, h2.t1
+        |  FROM h2 JOIN e2 c ON c.src = h2.mid2 AND c.t > h2.t2 AND c.t <= h2.t2 + 5)
+        |SELECT
+        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM h2) AS n_2hop_paths,
+        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM h3) AS n_3hop_paths,
+        |  (SELECT CAST(SUM(CASE WHEN d3 = s + 3 THEN 1 ELSE 0 END) AS BIGINT) FROM h3) AS n_chain_completions,
+        |  (SELECT CAST(SUM(CASE WHEN t % 90 = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM e2) AS n_planted_starts""".stripMargin),
 
     // Demand-censoring audit — the stockout bias a forecaster must
     // quantify before trusting sales as demand: planted daily demand
@@ -1603,7 +2626,7 @@ object Round16Ops extends Family {
     // the spec asserts the bias grows with the planted demand level (the
     // higher class stocks out more) and the uncensored class reads
     // nearly unbiased.
-    "agg_demand_censoring" -> ((s, d) => {
+    Op("agg_demand_censoring", (s, d) => {
       Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("p"))
         .withColumn("cls", (col("p") % 3).cast("int"))
@@ -1619,7 +2642,24 @@ object Round16Ops extends Family {
         .withColumn("bias_ppm", expr(
           "((true_mass - observed_mass) * 1000000) DIV true_mass"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH obs AS (
+        |  SELECT p, cls, t,
+        |    ${duckMd5Bits("'dm:' || CAST(p AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 40
+        |      + cls * 10 AS demand
+        |  FROM (SELECT CAST(p_partkey AS BIGINT) AS p,
+        |      CAST(p_partkey % 3 AS INT) AS cls FROM part) q,
+        |    generate_series(0, 23) AS g(t)),
+        |x AS (SELECT cls, demand, LEAST(demand, 35) AS sales FROM obs),
+        |r AS (
+        |  SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_days,
+        |    CAST(SUM(demand) AS BIGINT) AS true_mass,
+        |    CAST(SUM(sales) AS BIGINT) AS observed_mass,
+        |    CAST(SUM(CASE WHEN demand >= 35 THEN 1 ELSE 0 END) AS BIGINT) AS censored_days
+        |  FROM x GROUP BY 1)
+        |SELECT cls, n_days, true_mass, observed_mass, censored_days,
+        |  ((true_mass - observed_mass) * 1000000) // true_mass AS bias_ppm
+        |FROM r ORDER BY cls""".stripMargin),
 
     // Four-eyes / segregation-of-duties audit — the governance screen an
     // approval ledger passes: requester and approver ids with team =
@@ -1629,7 +2669,7 @@ object Round16Ops extends Family {
     // (approver == requester) fires EXACTLY on its plant; R2 (same team,
     // different id) fires on its plant plus the chance mass. Graded per
     // cohort with both planted censuses alongside.
-    "join_four_eyes" -> ((s, d) => {
+    Op("join_four_eyes", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("req", col("k") % 200L)
@@ -1648,7 +2688,22 @@ object Round16Ops extends Family {
           sum(when(col("k") % 43 === 5 && col("k") % 41 =!= 3, 1L).otherwise(0L))
             .as("planted_r2"))
         .orderBy("cohort")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey % 200 AS req,
+        |    CASE WHEN o_orderkey % 41 = 3 THEN o_orderkey % 200
+        |      WHEN o_orderkey % 43 = 5
+        |        THEN (o_orderkey % 200) - (o_orderkey % 200) % 10 + ((o_orderkey % 200) + 1) % 10
+        |      ELSE ${duckMd5Bits("ap", "o_orderkey", 6)} % 200
+        |    END AS appr
+        |  FROM orders)
+        |SELECT CAST(k % 4 AS INT) AS cohort,
+        |  CAST(COUNT(*) AS BIGINT) AS n_approvals,
+        |  CAST(SUM(CASE WHEN req = appr THEN 1 ELSE 0 END) AS BIGINT) AS r1_violations,
+        |  CAST(SUM(CASE WHEN req // 10 = appr // 10 AND req <> appr THEN 1 ELSE 0 END) AS BIGINT) AS r2_violations,
+        |  CAST(SUM(CASE WHEN k % 41 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS planted_r1,
+        |  CAST(SUM(CASE WHEN k % 43 = 5 AND k % 41 <> 3 THEN 1 ELSE 0 END) AS BIGINT) AS planted_r2
+        |FROM t GROUP BY 1 ORDER BY cohort""".stripMargin),
 
     // Embedding-snapshot drift monitor — warehouse_schema_drift's twin
     // for the vector column: snapshot B carries a planted +0.05 shift on
@@ -1658,7 +2713,7 @@ object Round16Ops extends Family {
     // ones — flag |delta| > 20000. Graded per 8-dim block: flagged dims
     // (block 0 → 8, rest → 0, exactly), |delta| mass. One posexplode +
     // two rollups.
-    "llm_embed_drift" -> ((s, d) => {
+    Op("llm_embed_drift", (s, d) => {
       val dims = Tables.embeddings(s, d)
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .withColumn("a", expr("CAST(FLOOR(CAST(v AS DOUBLE) * 1000000) AS BIGINT)"))
@@ -1673,7 +2728,25 @@ object Round16Ops extends Family {
           sum(when(col("flagged"), 1L).otherwise(0L)).as("n_flagged"),
           sum(abs(col("delta_micro"))).as("abs_delta_mass"))
         .orderBy("dim_block")
-    }),
+    },
+      """WITH pos AS (SELECT CAST(i AS BIGINT) AS dim FROM generate_series(0, 63) AS t(i)),
+        |dims AS (
+        |  SELECT e.vec_id, p.dim,
+        |    CAST(FLOOR(CAST(e.embedding[p.dim + 1] AS DOUBLE) * 1000000) AS BIGINT) AS a,
+        |    CAST(FLOOR((CAST(e.embedding[p.dim + 1] AS DOUBLE)
+        |      + CASE WHEN p.dim < 8 AND e.vec_id % 2 = 0 THEN 0.05 ELSE 0.0 END) * 1000000) AS BIGINT) AS b
+        |  FROM embeddings e, pos p WHERE p.dim + 1 <= len(e.embedding)),
+        |per AS (
+        |  SELECT dim, CAST(COUNT(*) AS BIGINT) AS n,
+        |    CAST(SUM(a) AS BIGINT) AS sa, CAST(SUM(b) AS BIGINT) AS sb
+        |  FROM dims GROUP BY 1),
+        |x AS (
+        |  SELECT dim, (sb - sa) // n AS delta_micro FROM per)
+        |SELECT CAST(dim // 8 AS INT) AS dim_block,
+        |  CAST(COUNT(*) AS BIGINT) AS n_dims,
+        |  CAST(SUM(CASE WHEN abs(delta_micro) > 20000 THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
+        |  CAST(SUM(abs(delta_micro)) AS BIGINT) AS abs_delta_mass
+        |FROM x GROUP BY 1 ORDER BY dim_block""".stripMargin),
 
     // Max-min fair allocation (water-filling) — the per-pool quota
     // division a multi-tenant service computes: tenants sorted by
@@ -1684,7 +2757,7 @@ object Round16Ops extends Family {
     // with total demand ≤ C satisfy everyone; overloaded pools never
     // exceed C (floor guarantees Σ alloc ≤ C). Graded per pool-load
     // class: demand/alloc masses, satisfied/throttled censuses.
-    "service_maxmin_fair" -> ((s, d) => {
+    Op("service_maxmin_fair", (s, d) => {
       val ten = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("tn"))
         .withColumn("pool", col("tn") % 40L)
@@ -1721,7 +2794,43 @@ object Round16Ops extends Family {
           sum(when(col("satisfied"), 1L).otherwise(0L)).as("n_satisfied"),
           sum(when(!col("satisfied"), 1L).otherwise(0L)).as("n_throttled"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH ten AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS tn, c_custkey % 40 AS pool,
+        |    CAST((c_custkey % 40) % 2 AS INT) AS cls,
+        |    ${duckMd5Bits("mf", "c_custkey", 6)}
+        |      % (120 + ((c_custkey % 40) % 2) * 400) + 20 AS dem
+        |  FROM customer),
+        |ranked AS (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY pool ORDER BY dem, tn) AS rn,
+        |    CAST(SUM(dem) OVER (PARTITION BY pool ORDER BY dem, tn
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+        |    COUNT(*) OVER (PARTITION BY pool) AS cnt
+        |  FROM ten),
+        |lv AS (
+        |  SELECT *, cnt * 250 AS cap,
+        |    (cnt * 250 - (cum - dem)) // (cnt - rn + 1) AS level
+        |  FROM ranked),
+        |sf AS (SELECT *, dem <= level AS satisfied FROM lv),
+        |pt AS (
+        |  SELECT pool, MAX(cap) AS cap,
+        |    CAST(SUM(CASE WHEN satisfied THEN dem ELSE 0 END) AS BIGINT) AS sat_mass,
+        |    CAST(SUM(CASE WHEN NOT satisfied THEN 1 ELSE 0 END) AS BIGINT) AS n_unsat
+        |  FROM sf GROUP BY 1),
+        |th AS (SELECT pool,
+        |    CASE WHEN n_unsat > 0 THEN (cap - sat_mass) // n_unsat ELSE 0 END AS theta
+        |  FROM pt),
+        |al AS (
+        |  SELECT sf.cls, sf.pool, sf.dem, sf.satisfied,
+        |    CASE WHEN sf.satisfied THEN sf.dem ELSE th.theta END AS alloc
+        |  FROM sf JOIN th ON th.pool = sf.pool)
+        |SELECT cls, CAST(COUNT(DISTINCT pool) AS BIGINT) AS n_pools,
+        |  CAST(COUNT(*) AS BIGINT) AS n_tenants,
+        |  CAST(SUM(dem) AS BIGINT) AS demand_mass,
+        |  CAST(SUM(alloc) AS BIGINT) AS alloc_mass,
+        |  CAST(SUM(CASE WHEN satisfied THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
+        |  CAST(SUM(CASE WHEN NOT satisfied THEN 1 ELSE 0 END) AS BIGINT) AS n_throttled
+        |FROM al GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // T+2 settlement-fail ageing — the fails ledger a custodian reports
     // (CSDR-style): each trade settles two days after trade date unless
@@ -1731,7 +2840,7 @@ object Round16Ops extends Family {
     // CASE chain (bounded 4 — no iteration). Graded per counterparty
     // class: on-time census, delay-day mass, age histogram, buy-ins —
     // the spec asserts the high-fail class ages worse at every bucket.
-    "agg_settlement_fails" -> ((s, d) => {
+    Op("agg_settlement_fails", (s, d) => {
       def fail(j: Int) =
         s"(${md5Bits(s"sf$j", "k", 6)} % 10 < 3 + 3 * (k % 2))"
       val t = Tables.orders(s, d)
@@ -1753,6 +2862,30 @@ object Round16Ops extends Family {
           sum(when(col("delay") === 3L, 1L).otherwise(0L)).as("age3"),
           sum(when(col("buy_in"), 1L).otherwise(0L)).as("n_buy_ins"))
         .orderBy("cp_cls")
+    },
+      {
+      def fail(j: Int) =
+        s"(${duckMd5Bits(s"sf$j", "k", 6)} % 10 < 3 + 3 * (k % 2))"
+      s"""WITH t AS (
+         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+         |    CAST(o_orderkey % 2 AS INT) AS cp_cls
+         |  FROM orders),
+         |x AS (
+         |  SELECT k, cp_cls,
+         |    CASE WHEN NOT ${fail(1)} THEN 0
+         |      WHEN NOT ${fail(2)} THEN 1
+         |      WHEN NOT ${fail(3)} THEN 2
+         |      WHEN NOT ${fail(4)} THEN 3
+         |      ELSE 4 END AS delay
+         |  FROM t)
+         |SELECT cp_cls, CAST(COUNT(*) AS BIGINT) AS n_trades,
+         |  CAST(SUM(CASE WHEN delay = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_on_time,
+         |  CAST(SUM(delay) AS BIGINT) AS delay_day_mass,
+         |  CAST(SUM(CASE WHEN delay = 1 THEN 1 ELSE 0 END) AS BIGINT) AS age1,
+         |  CAST(SUM(CASE WHEN delay = 2 THEN 1 ELSE 0 END) AS BIGINT) AS age2,
+         |  CAST(SUM(CASE WHEN delay = 3 THEN 1 ELSE 0 END) AS BIGINT) AS age3,
+         |  CAST(SUM(CASE WHEN delay = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_buy_ins
+         |FROM x GROUP BY 1 ORDER BY cp_cls""".stripMargin
     }),
 
     // BIC (ISO 9362) structural validation — the counterparty-id gate
@@ -1761,7 +2894,7 @@ object Round16Ops extends Family {
     // non-member) and a 1-in-9 lowercase corruption that breaks the
     // [A-Z0-9] form; validity = structural regex AND country membership.
     // Both planted censuses are caught exactly. Projection + rollup.
-    "fn_bic_validate" -> ((s, d) => {
+    Op("fn_bic_validate", (s, d) => {
       def ch(i: Int) =
         s"chr(65 + ${md5Bits("concat('bc:', CAST(k AS STRING))", 2, i)} % 26)"
       val t = Tables.customer(s, d)
@@ -1786,6 +2919,37 @@ object Round16Ops extends Family {
           sum(when(col("k") % 9 === 4, 1L).otherwise(0L)).as("planted_form"),
           sum(when(col("k") % 5 === 4, 1L).otherwise(0L)).as("planted_country"))
         .orderBy("cohort")
+    },
+      {
+      def ch(i: Int) =
+        s"chr(65 + CAST(${duckMd5Bits("'bc:' || CAST(k AS VARCHAR)", 2, i)} % 26 AS INT))"
+      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
+         |b AS (
+         |  SELECT k,
+         |    (['US', 'GB', 'DE', 'FR', 'XX'])[CAST(k % 5 AS INT) + 1] AS country,
+         |    ${ch(1)} || ${ch(3)} || ${ch(5)} || ${ch(7)} AS bank,
+         |    lpad(CAST(${duckMd5Bits("bl", "k", 4)} % 100 AS VARCHAR), 2, '0') AS loc
+         |  FROM t),
+         |c AS (SELECT k, country, bank || country || loc AS bic0 FROM b),
+         |e AS (
+         |  SELECT k, country,
+         |    CASE WHEN k % 9 = 4
+         |      THEN lower(substring(bic0, 1, 1)) || substring(bic0, 2, 7)
+         |      ELSE bic0 END AS bic
+         |  FROM c),
+         |v AS (
+         |  SELECT k,
+         |    regexp_matches(bic, '^[A-Z]{4}[A-Z]{2}[A-Z0-9]{2}$$') AS form_ok,
+         |    country IN ('US', 'GB', 'DE', 'FR') AS country_ok
+         |  FROM e)
+         |SELECT CAST(k % 3 AS INT) AS cohort,
+         |  CAST(COUNT(*) AS BIGINT) AS n_bics,
+         |  CAST(SUM(CASE WHEN form_ok AND country_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
+         |  CAST(SUM(CASE WHEN NOT form_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_bad_form,
+         |  CAST(SUM(CASE WHEN NOT country_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_bad_country,
+         |  CAST(SUM(CASE WHEN k % 9 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS planted_form,
+         |  CAST(SUM(CASE WHEN k % 5 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS planted_country
+         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // Mean reciprocal rank — the retrieval-eval summary the recall@k /
@@ -1795,7 +2959,7 @@ object Round16Ops extends Family {
     // reciprocal rank as exact floor(10⁶/r), masses summed per class.
     // The wave spec asserts B's MRR mass beats A's on every class and
     // rank-1 hits bound the mass from above.
-    "llm_retriever_ab_mrr" -> ((s, d) => {
+    Op("llm_retriever_ab_mrr", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("cls", (col("k") % 3).cast("int"))
@@ -1813,7 +2977,22 @@ object Round16Ops extends Family {
           sum(when(col("ra") === 1L, 1L).otherwise(0L)).as("a_at_1"),
           sum(when(col("rb") === 1L, 1L).otherwise(0L)).as("b_at_1"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    CAST(o_orderkey % 3 AS INT) AS cls,
+        |    ${duckMd5Bits("ma", "o_orderkey", 6)} % 20 + 1 AS ra,
+        |    CASE WHEN ${duckMd5Bits("mb", "o_orderkey", 6)} % 10 < 7
+        |      THEN ${duckMd5Bits("mc", "o_orderkey", 6)} % 8 + 1
+        |      ELSE ${duckMd5Bits("mc", "o_orderkey", 6)} % 20 + 1
+        |    END AS rb
+        |  FROM orders)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_queries,
+        |  CAST(SUM(1000000 // ra) AS BIGINT) AS mrr_a_mass,
+        |  CAST(SUM(1000000 // rb) AS BIGINT) AS mrr_b_mass,
+        |  CAST(SUM(CASE WHEN ra = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a_at_1,
+        |  CAST(SUM(CASE WHEN rb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS b_at_1
+        |FROM t GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // RPC deadline propagation — the budget arithmetic a 3-tier call
     // chain runs (gateway → service → db): overall deadline 800 ms, each
@@ -1823,7 +3002,7 @@ object Round16Ops extends Family {
     // (no iteration). Graded per cohort: outcome censuses + success
     // latency mass — the spec asserts the db tier (thinnest residual
     // budget) times out the most.
-    "service_deadline_budgets" -> ((s, d) => {
+    Op("service_deadline_budgets", (s, d) => {
       def lat(salt: String, base: Int, w: Int) =
         s"""(${md5Bits(s"concat('$salt', CAST(k AS STRING))", 6)} % $w + $base
            | + (CASE WHEN ${md5Bits(s"concat('${salt}t', CAST(k AS STRING))", 6)} % 20 = 0
@@ -1850,6 +3029,33 @@ object Round16Ops extends Family {
           sum(when(col("outcome") === "ok", col("lg") + col("ls") + col("ldb"))
             .otherwise(0L)).as("ok_latency_mass"))
         .orderBy("cohort")
+    },
+      {
+      def lat(salt: String, base: Int, w: Int) =
+        s"""(${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $w + $base
+           | + (CASE WHEN ${duckMd5Bits(s"'${salt}t' || CAST(k AS VARCHAR)", 6)} % 20 = 0
+           |    THEN 400 ELSE 0 END))""".stripMargin
+      s"""WITH t AS (
+         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+         |    ${lat("dg:", 50, 150)} AS lg,
+         |    ${lat("ds:", 50, 200)} AS ls,
+         |    ${lat("dd:", 50, 300)} AS ldb
+         |  FROM orders),
+         |x AS (
+         |  SELECT k, lg, ls, ldb,
+         |    CASE WHEN lg > LEAST(400, 800) THEN 'timeout_gw'
+         |      WHEN ls > LEAST(350, 800 - lg) THEN 'timeout_svc'
+         |      WHEN ldb > LEAST(300, 800 - lg - ls) THEN 'timeout_db'
+         |      ELSE 'ok' END AS outcome
+         |  FROM t)
+         |SELECT CAST(k % 3 AS INT) AS cohort,
+         |  CAST(COUNT(*) AS BIGINT) AS n_requests,
+         |  CAST(SUM(CASE WHEN outcome = 'ok' THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
+         |  CAST(SUM(CASE WHEN outcome = 'timeout_gw' THEN 1 ELSE 0 END) AS BIGINT) AS n_timeout_gw,
+         |  CAST(SUM(CASE WHEN outcome = 'timeout_svc' THEN 1 ELSE 0 END) AS BIGINT) AS n_timeout_svc,
+         |  CAST(SUM(CASE WHEN outcome = 'timeout_db' THEN 1 ELSE 0 END) AS BIGINT) AS n_timeout_db,
+         |  CAST(SUM(CASE WHEN outcome = 'ok' THEN lg + ls + ldb ELSE 0 END) AS BIGINT) AS ok_latency_mass
+         |FROM x GROUP BY 1 ORDER BY cohort""".stripMargin
     }),
 
     // Erlang C — the wait-probability the staffing calculator needs
@@ -1860,7 +3066,7 @@ object Round16Ops extends Family {
     // DECIMAL(38,0)/HUGEINT). Graded per class: P_wait ppm and the mean
     // wait factor — the spec asserts the POOLING law: more servers at
     // the same utilization wait strictly less.
-    "agg_erlang_c" -> ((s, d) => {
+    Op("agg_erlang_c", (s, d) => {
       val t = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
         .withColumn("cls", (col("m") % 4).cast("int"))
@@ -1886,7 +3092,36 @@ object Round16Ops extends Family {
           max("a").as("a_milli"), max("pwait_ppm").as("pwait_ppm"),
           max("wq_factor_ppm").as("wq_factor_ppm"))
         .orderBy("cls")
-    }),
+    },
+      """WITH t AS (
+        |  SELECT CAST(s_suppkey AS BIGINT) AS m,
+        |    CAST(s_suppkey % 4 AS INT) AS cls,
+        |    CAST(s_suppkey % 4 + 2 AS BIGINT) AS c,
+        |    (s_suppkey % 4 + 2) * 700 AS a
+        |  FROM supplier),
+        |x AS (
+        |  SELECT m, cls, c, a,
+        |    CASE c
+        |      WHEN 2 THEN 2000000 + a * 2000
+        |      WHEN 3 THEN 6000000000 + a * 6000000 + a * a * 3000
+        |      WHEN 4 THEN 24000000000000 + a * 24000000000 + a * a * 12000000 + a * a * a * 4000
+        |      WHEN 5 THEN 120000000000000000 + a * 120000000000000 + a * a * 60000000000
+        |        + a * a * a * 20000000 + a * a * a * a * 5000
+        |    END AS sumt,
+        |    CASE c WHEN 2 THEN a * a WHEN 3 THEN a * a * a
+        |      WHEN 4 THEN a * a * a * a ELSE a * a * a * a * a END AS tc
+        |  FROM t),
+        |p AS (
+        |  SELECT m, cls, c, a,
+        |    CAST((CAST(1000 AS HUGEINT) * tc * 1000000)
+        |      // (CAST(300 AS HUGEINT) * sumt + CAST(1000 AS HUGEINT) * tc) AS BIGINT) AS pwait_ppm
+        |  FROM x),
+        |w AS (SELECT *, (pwait_ppm * 1000) // (c * 300) AS wq_factor_ppm FROM p)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_pools,
+        |  CAST(MAX(c) AS BIGINT) AS c_servers, CAST(MAX(a) AS BIGINT) AS a_milli,
+        |  CAST(MAX(pwait_ppm) AS BIGINT) AS pwait_ppm,
+        |  CAST(MAX(wq_factor_ppm) AS BIGINT) AS wq_factor_ppm
+        |FROM w GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // Order-book imbalance signal — the microstructure screen beside
     // agg_ohlc_candles: per (symbol, tick) md5 bid/ask depths, planted
@@ -1894,7 +3129,7 @@ object Round16Ops extends Family {
     // 10; the lead window grades the signal's hit rate in exact ppm
     // (≈ 700000 by construction) beside the depth masses. Per-symbol
     // windows, linear.
-    "win_orderbook_imbalance" -> ((s, d) => {
+    Op("win_orderbook_imbalance", (s, d) => {
       val wS = Window.partitionBy("m").orderBy("t")
       val t = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
@@ -1922,7 +3157,35 @@ object Round16Ops extends Family {
           sum("bid").as("bid_mass"), sum("ask").as("ask_mass"))
         .withColumn("hit_ppm", expr("(n_hits * 1000000) DIV n_signals"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT m, cls, t,
+        |    ${duckMd5Bits("'ob:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS bid,
+        |    ${duckMd5Bits("'oa:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS ask,
+        |    ${duckMd5Bits("'om:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 10 < 7 AS agree
+        |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
+        |      CAST(s_suppkey % 2 AS INT) AS cls FROM supplier) q,
+        |    generate_series(0, 23) AS g(t)),
+        |s1 AS (
+        |  SELECT m, cls, t, bid, ask,
+        |    CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END AS imb_sign,
+        |    CASE WHEN agree THEN (CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END)
+        |      ELSE -(CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END) END AS next_move
+        |  FROM t),
+        |s2 AS (
+        |  SELECT m, cls, bid, ask,
+        |    LAG(imb_sign, 1) OVER (PARTITION BY m ORDER BY t) AS pred,
+        |    LAG(next_move, 1) OVER (PARTITION BY m ORDER BY t) AS actual_prev
+        |  FROM s1),
+        |f AS (SELECT * FROM s2 WHERE pred IS NOT NULL AND pred <> 0),
+        |g2 AS (
+        |  SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_signals,
+        |    CAST(SUM(CASE WHEN actual_prev = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+        |    CAST(SUM(bid) AS BIGINT) AS bid_mass, CAST(SUM(ask) AS BIGINT) AS ask_mass
+        |  FROM f GROUP BY 1)
+        |SELECT cls, n_signals, n_hits, bid_mass, ask_mass,
+        |  (n_hits * 1000000) // n_signals AS hit_ppm
+        |FROM g2 ORDER BY cls""".stripMargin),
 
     // Garnishment priority allocation — the payroll-compliance waterfall
     // a person-service runs: up to three orders per employee (child
@@ -1933,7 +3196,7 @@ object Round16Ops extends Family {
     // fully-paid census — the spec asserts seniority (child support
     // never shorts while a junior class collects) and the ceiling is
     // never exceeded.
-    "join_garnishment_priority" -> ((s, d) => {
+    Op("join_garnishment_priority", (s, d) => {
       val emp = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("di", expr(
@@ -1959,7 +3222,32 @@ object Round16Ops extends Family {
           sum(when(col("alloc") === col("amount"), 1L).otherwise(0L))
             .as("n_fully_paid"))
         .orderBy("pri")
-    }),
+    },
+      s"""WITH emp AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    (${duckMd5Bits("gd", "c_custkey", 6)} % 3000 + 1000) AS di
+        |  FROM customer),
+        |e2 AS (SELECT k, (di * 25) // 100 AS ceiling FROM emp),
+        |ords AS (
+        |  SELECT e2.k, e2.ceiling, g.pri,
+        |    ${duckMd5Bits("'ga:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)", 6)} % 400 + 50 AS amount
+        |  FROM e2, generate_series(1, 3) AS g(pri)
+        |  WHERE ${duckMd5Bits("'go:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)", 6)} % 10 < 6),
+        |al AS (
+        |  SELECT k, pri, amount, ceiling,
+        |    CAST(coalesce(SUM(amount) OVER (PARTITION BY k ORDER BY pri
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
+        |  FROM ords),
+        |x AS (
+        |  SELECT pri, amount,
+        |    GREATEST(0, LEAST(amount, ceiling - cum_before)) AS alloc
+        |  FROM al)
+        |SELECT CAST(pri AS INT) AS pri, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(amount) AS BIGINT) AS requested_mass,
+        |  CAST(SUM(alloc) AS BIGINT) AS allocated_mass,
+        |  CAST(SUM(amount - alloc) AS BIGINT) AS shortfall_mass,
+        |  CAST(SUM(CASE WHEN alloc = amount THEN 1 ELSE 0 END) AS BIGINT) AS n_fully_paid
+        |FROM x GROUP BY 1 ORDER BY pri""".stripMargin),
 
     // VWAP execution quality — the best-execution report a broker files:
     // 24 market ticks per parent order (md5 prices around 100.00, md5
@@ -1970,7 +3258,7 @@ object Round16Ops extends Family {
     // integer comparison (no division anywhere). The spec asserts class
     // 1 executes above market VWAP on nearly every order and class 0
     // splits.
-    "win_vwap_execution" -> ((s, d) => {
+    Op("win_vwap_execution", (s, d) => {
       val wR = Window.partitionBy("m").orderBy(desc("p"), col("t"))
       val ticks = Tables.supplier(s, d)
         .select(col("s_suppkey").cast("bigint").as("m"))
@@ -2000,7 +3288,39 @@ object Round16Ops extends Family {
           sum("pv_exec").as("pv_exec_mass"), sum("v_exec").as("v_exec_mass"),
           sum(when(col("above_mkt"), 1L).otherwise(0L)).as("n_above_mkt"))
         .orderBy("cls")
-    }),
+    },
+      s"""WITH ticks AS (
+        |  SELECT m, cls, t,
+        |    10000 + ${duckMd5Bits("'vp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 200 - 100 AS p,
+        |    ${duckMd5Bits("'vv:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS v,
+        |    ${duckMd5Bits("'vx:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3 = 0 AS pick,
+        |    ${duckMd5Bits("'ve:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 90 + 10 AS ev0
+        |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
+        |      CAST(s_suppkey % 2 AS INT) AS cls FROM supplier) q,
+        |    generate_series(0, 23) AS g(t)),
+        |rk AS (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY m ORDER BY p DESC, t) AS prank
+        |  FROM ticks),
+        |ex AS (
+        |  SELECT m, cls, p, v,
+        |    CASE WHEN (CASE WHEN cls = 1 THEN pick AND prank <= 12 ELSE pick END)
+        |      THEN ev0 ELSE 0 END AS ev
+        |  FROM rk),
+        |per AS (
+        |  SELECT m, cls, CAST(SUM(p * v) AS BIGINT) AS pv_mkt,
+        |    CAST(SUM(v) AS BIGINT) AS v_mkt,
+        |    CAST(SUM(p * ev) AS BIGINT) AS pv_exec,
+        |    CAST(SUM(ev) AS BIGINT) AS v_exec
+        |  FROM ex GROUP BY 1, 2),
+        |f AS (SELECT *, pv_exec * v_mkt > pv_mkt * v_exec AS above_mkt
+        |  FROM per WHERE v_exec > 0)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(pv_mkt) AS BIGINT) AS pv_mkt_mass,
+        |  CAST(SUM(v_mkt) AS BIGINT) AS v_mkt_mass,
+        |  CAST(SUM(pv_exec) AS BIGINT) AS pv_exec_mass,
+        |  CAST(SUM(v_exec) AS BIGINT) AS v_exec_mass,
+        |  CAST(SUM(CASE WHEN above_mkt THEN 1 ELSE 0 END) AS BIGINT) AS n_above_mkt
+        |FROM f GROUP BY 1 ORDER BY cls""".stripMargin),
 
     // SSN structural validation — the US person-service intake gate:
     // area 001–899 excluding 666, group 01–99, serial 0001–9999, with
@@ -2009,7 +3329,7 @@ object Round16Ops extends Family {
     // except the honest 1-in-898 chance of area 666. First-matching-rule
     // classification keeps the censuses disjoint; each planted defect is
     // caught, graded beside its plant.
-    "fn_ssn_validate" -> ((s, d) => {
+    Op("fn_ssn_validate", (s, d) => {
       val t = Tables.customer(s, d)
         .select(col("c_custkey").cast("bigint").as("k"))
         .withColumn("area0", expr(
@@ -2035,7 +3355,32 @@ object Round16Ops extends Family {
           sum(when(col("k") % 23 >= 4 && col("k") % 23 <= 7, 1L).otherwise(0L))
             .as("n_planted"))
         .orderBy("verdict")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS k,
+        |    1 + ${duckMd5Bits("sa", "c_custkey", 6)} % 898 AS area0,
+        |    1 + ${duckMd5Bits("sg", "c_custkey", 6)} % 99 AS grp0,
+        |    1 + ${duckMd5Bits("sn", "c_custkey", 6)} % 9999 AS ser0
+        |  FROM customer),
+        |x AS (
+        |  SELECT k,
+        |    CASE WHEN k % 23 = 4 THEN 666
+        |      WHEN k % 23 = 5 THEN 900 + ${duckMd5Bits("s9", "k", 4)} % 100
+        |      ELSE area0 END AS area,
+        |    CASE WHEN k % 23 = 6 THEN 0 ELSE grp0 END AS grp,
+        |    CASE WHEN k % 23 = 7 THEN 0 ELSE ser0 END AS ser
+        |  FROM t),
+        |v AS (
+        |  SELECT k,
+        |    CASE WHEN area = 666 THEN 'bad_area_666'
+        |      WHEN area >= 900 THEN 'bad_area_9xx'
+        |      WHEN grp = 0 THEN 'bad_group'
+        |      WHEN ser = 0 THEN 'bad_serial'
+        |      ELSE 'valid' END AS verdict
+        |  FROM x)
+        |SELECT verdict, CAST(COUNT(*) AS BIGINT) AS n_ssns,
+        |  CAST(SUM(CASE WHEN k % 23 >= 4 AND k % 23 <= 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
+        |FROM v GROUP BY 1 ORDER BY verdict""".stripMargin),
 
     // Ad-budget pacing — the spend governor a delivery system runs: a
     // declared 24-hour diurnal weight curve paces the daily budget
@@ -2045,7 +3390,7 @@ object Round16Ops extends Family {
     // ALWAYS (the pacing law), throttled-hour census, fill ppm — the
     // spec asserts spend never exceeds target and the tight-budget class
     // throttles more.
-    "agg_budget_pacing" -> ((s, d) => {
+    Op("agg_budget_pacing", (s, d) => {
       val t = Tables.part(s, d)
         .select(col("p_partkey").cast("bigint").as("p"))
         .withColumn("cls", (col("p") % 3).cast("int"))
@@ -2064,6 +3409,27 @@ object Round16Ops extends Family {
             .mkString(" + "))).as("throttled_hours"),
           sum(expr("(sp23c * 1000000) DIV budget")).as("fill_ppm_mass"))
         .orderBy("cls")
+    },
+      {
+      val pcMap: Map[String, String] = pacingCols("//").toMap
+      val stepCtes = (0 to 23).map { h =>
+        val from = if (h == 0) "wide" else s"pc${h - 1}"
+        s"pc$h AS (SELECT *, ${pcMap(s"tg$h")} AS tg$h, ${pcMap(s"sp$h")} AS sp$h, " +
+          s"${pcMap(s"sp${h}c")} AS sp${h}c FROM $from)"
+      }.mkString(",\n")
+      s"""WITH wide AS (
+         |  SELECT CAST(p_partkey AS BIGINT) AS p,
+         |    CAST(p_partkey % 3 AS INT) AS cls,
+         |    (p_partkey % 3 + 1) * 100000 AS budget,
+         |${(0 to 23).map(h => s"    ${duckMd5Bits(s"bp$h", "p_partkey", 6)} % 9000 + 1000 AS dm$h").mkString(",\n")}
+         |  FROM part),
+         |$stepCtes
+         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_campaigns,
+         |  CAST(SUM(budget) AS BIGINT) AS budget_mass,
+         |  CAST(SUM(sp23c) AS BIGINT) AS spend_mass,
+         |  CAST(SUM(${(0 to 23).map(h => s"(CASE WHEN sp$h < dm$h THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS throttled_hours,
+         |  CAST(SUM((sp23c * 1000000) // budget) AS BIGINT) AS fill_ppm_mass
+         |FROM pc23 GROUP BY 1 ORDER BY cls""".stripMargin
     }),
 
     // LLM-judge position-bias audit — the eval-harness hygiene check a
@@ -2075,7 +3441,7 @@ object Round16Ops extends Family {
     // agree under swap), first-position win ppm — the spec asserts class
     // 1's first-position rate is inflated and its consistency is lower,
     // the full positional-bias signature.
-    "llm_judge_position_bias" -> ((s, d) => {
+    Op("llm_judge_position_bias", (s, d) => {
       val t = Tables.orders(s, d)
         .select(col("o_orderkey").cast("bigint").as("k"))
         .withColumn("jcls", (col("k") % 2).cast("int"))
@@ -2110,7 +3476,34 @@ object Round16Ops extends Family {
         .withColumn("first_win_ppm", expr(
           "((first_wins_o1 + first_wins_o2) * 1000000) DIV (2 * n_pairs)"))
         .orderBy("jcls")
-    }),
+    },
+      s"""WITH t AS (
+        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+        |    CAST(o_orderkey % 2 AS INT) AS jcls,
+        |    ${duckMd5Bits("jb", "o_orderkey", 6)} % 2 = 0 AS a_better,
+        |    ${duckMd5Bits("j1", "o_orderkey", 6)} % 100 AS d1,
+        |    ${duckMd5Bits("j2", "o_orderkey", 6)} % 100 AS d2
+        |  FROM orders),
+        |x AS (
+        |  SELECT k, jcls, a_better,
+        |    d1 < (CASE WHEN a_better THEN 75 ELSE 25 END) + jcls * 15 AS pf1,
+        |    d2 < (CASE WHEN a_better THEN 25 ELSE 75 END) + jcls * 15 AS pf2
+        |  FROM t),
+        |v AS (
+        |  SELECT k, jcls, a_better, pf1, pf2,
+        |    pf1 AS pa1, NOT pf2 AS pa2
+        |  FROM x),
+        |g AS (
+        |  SELECT jcls, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        |    CAST(SUM(CASE WHEN pa1 = pa2 THEN 1 ELSE 0 END) AS BIGINT) AS n_consistent,
+        |    CAST(SUM(CASE WHEN pf1 THEN 1 ELSE 0 END) AS BIGINT) AS first_wins_o1,
+        |    CAST(SUM(CASE WHEN pf2 THEN 1 ELSE 0 END) AS BIGINT) AS first_wins_o2,
+        |    CAST(SUM(CASE WHEN pa1 = a_better THEN 1 ELSE 0 END) AS BIGINT) AS correct_o1
+        |  FROM v GROUP BY 1)
+        |SELECT jcls, n_pairs, n_consistent, first_wins_o1, first_wins_o2,
+        |  correct_o1,
+        |  ((first_wins_o1 + first_wins_o2) * 1000000) // (2 * n_pairs) AS first_win_ppm
+        |FROM g ORDER BY jcls""".stripMargin),
 
     // Subtitle-timing drift detection — the resync screen a captioning
     // pipeline runs: 24 cues per video, subtitle time = audio anchor +
@@ -2122,7 +3515,7 @@ object Round16Ops extends Family {
     // |numerator| at 13824 < 27600 (it can NEVER flag) while the 2 ms/cue
     // class sits at 55200 ± 13824 (it ALWAYS does) — both censuses exact
     // by construction, not by luck.
-    "mm_subtitle_drift" -> ((s, d) => {
+    Op("mm_subtitle_drift", (s, d) => {
       // Σt = 276, Σt² = 4324, n = 24 → den = n·Σt² − (Σt)² = 27600
       val cues = Tables.documents(s, d)
         .select(col("doc_id").cast("bigint").as("v"))
@@ -2142,7 +3535,24 @@ object Round16Ops extends Family {
           sum(when(col("resync"), 1L).otherwise(0L)).as("n_resync"),
           sum(abs(col("slope_num"))).as("slope_num_mass"))
         .orderBy("cls")
-    })
+    },
+      s"""WITH cues AS (
+        |  SELECT v, cls, t,
+        |    (CASE WHEN cls = 1 THEN 2 * t WHEN cls = 2 THEN 5 * t ELSE 0 END)
+        |      + ${duckMd5Bits("'sd:' || CAST(v AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 9 - 4 AS off
+        |  FROM (SELECT CAST(doc_id AS BIGINT) AS v,
+        |      CAST(doc_id % 3 AS INT) AS cls FROM documents) q,
+        |    generate_series(0, 23) AS g(t)),
+        |per AS (
+        |  SELECT v, cls, CAST(SUM(off) AS BIGINT) AS sx,
+        |    CAST(SUM(t * off) AS BIGINT) AS stx
+        |  FROM cues GROUP BY 1, 2),
+        |x AS (
+        |  SELECT v, cls, 24 * stx - 276 * sx AS slope_num FROM per)
+        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_videos,
+        |  CAST(SUM(CASE WHEN abs(slope_num) > 27600 THEN 1 ELSE 0 END) AS BIGINT) AS n_resync,
+        |  CAST(SUM(abs(slope_num)) AS BIGINT) AS slope_num_mass
+        |FROM x GROUP BY 1 ORDER BY cls""".stripMargin)
   )
 
   /** Budget-pacing recurrence: spend_h = min(demand_h, target_cum_h −
@@ -2178,15 +3588,6 @@ object Round16Ops extends Family {
         else s"le$t" -> s"(((le${t - 1} + 400 * n${t - 1}) * 700) $div 1000)"
       Seq(exc, s"lam$t" -> s"(200 + le$t)")
     }
-
-  /** Bech32 polymod steps (BIP-173): the state transition
-    * chk' = ((chk & 0x1ffffff) << 5) ^ g ^ ⊕{GEN_i : bit i of chk>>25}
-    * is a bijective LFSR step, so ANY single 5-bit-group substitution
-    * changes the final state — the detection law the op grades. `xor`,
-    * `shl`, `shr` abstract the dialect (Spark `a ^ b`; DuckDB `xor()`
-    * since its `^` is POWER). */
-  private[ops] val Bech32Gen =
-    Seq(0x3b6a57b2L, 0x26508e6dL, 0x1ea119faL, 0x3d4233ddL, 0x2a1462b3L)
 
   /** One polymod step in plain Scala — folds the fixed hrp expansion to a
     * literal so the SQL chains start mid-state. */
@@ -2384,1493 +3785,6 @@ object Round16Ops extends Family {
        |  FROM $e ee JOIN mem$lvl ma ON ma.i = ee.a
        |  JOIN mem$lvl mb ON mb.i = ee.b
        |  GROUP BY 1, 2)""".stripMargin
-
-  /** Shared oracle CTEs for the ring-chain graph fixture. */
-  private val RingChainCtes =
-    """nodes AS MATERIALIZED (
-      |  SELECT DISTINCT CAST(c_custkey % 120 AS BIGINT) AS v FROM customer),
-      |ring AS (
-      |  SELECT LEAST(v, (v // 6) * 6 + (v % 6 + 1) % 6) AS a,
-      |    GREATEST(v, (v // 6) * 6 + (v % 6 + 1) % 6) AS b
-      |  FROM nodes),
-      |edges AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-      |  SELECT a, b FROM ring
-      |  UNION ALL SELECT v AS a, v + 1 AS b FROM nodes
-      |  WHERE v % 6 = 5 AND v < 114) q)""".stripMargin
-
-  /** Nine unrolled min-label + pointer-jump rounds (the ccComponents
-    * mirror): lab0 must exist; emits lab1..lab9 over `dire`. */
-  private val CcRoundsSql: String = (1 to 9).map { r =>
-    s"""lab$r AS MATERIALIZED (
-       |  SELECT p.x, p.v, LEAST(p.l, q.l, coalesce(nm.nl, p.l)) AS l
-       |  FROM lab${r - 1} p
-       |  JOIN lab${r - 1} q ON q.x = p.x AND q.v = p.l
-       |  LEFT JOIN (SELECT e.x, e.b AS v, MIN(m.l) AS nl
-       |    FROM dire e JOIN lab${r - 1} m ON m.x = e.x AND m.v = e.a
-       |    GROUP BY 1, 2) nm ON nm.x = p.x AND nm.v = p.v)""".stripMargin
-  }.mkString(",\n")
-
-  val oracles: Map[String, String] = unique(
-    "graph_articulation" ->
-      s"""WITH $RingChainCtes,
-         |excl AS (SELECT v AS x FROM nodes UNION ALL SELECT -1),
-         |nodesx AS (SELECT e.x, n.v FROM excl e, nodes n WHERE n.v <> e.x),
-         |ex0 AS (SELECT e.x, g.a, g.b FROM excl e, edges g
-         |  WHERE g.a <> e.x AND g.b <> e.x),
-         |dire AS MATERIALIZED (
-         |  SELECT x, a, b FROM ex0 UNION ALL SELECT x, b, a FROM ex0),
-         |lab0 AS MATERIALIZED (SELECT x, v, v AS l FROM nodesx),
-         |$CcRoundsSql,
-         |comps AS (SELECT x, CAST(COUNT(DISTINCT l) AS BIGINT) AS ncomp
-         |  FROM lab9 GROUP BY 1),
-         |base AS (SELECT ncomp AS base_comps FROM comps WHERE x = -1)
-         |SELECT c.x AS node, c.ncomp AS n_comps_without,
-         |  c.ncomp > b.base_comps AS is_articulation
-         |FROM comps c, base b WHERE c.x <> -1 ORDER BY node""".stripMargin,
-
-    "graph_bridges" ->
-      s"""WITH $RingChainCtes,
-         |eid AS (SELECT a, b, a * 1000 + b AS eid FROM edges),
-         |excl AS (SELECT eid AS x FROM eid UNION ALL SELECT -1),
-         |nodesx AS (SELECT e.x, n.v FROM excl e, nodes n),
-         |ex0 AS (SELECT e.x, g.a, g.b FROM excl e, eid g WHERE g.eid <> e.x),
-         |dire AS MATERIALIZED (
-         |  SELECT x, a, b FROM ex0 UNION ALL SELECT x, b, a FROM ex0),
-         |lab0 AS MATERIALIZED (SELECT x, v, v AS l FROM nodesx),
-         |$CcRoundsSql,
-         |comps AS (SELECT x, CAST(COUNT(DISTINCT l) AS BIGINT) AS ncomp
-         |  FROM lab9 GROUP BY 1),
-         |base AS (SELECT ncomp AS base_comps FROM comps WHERE x = -1)
-         |SELECT c.x // 1000 AS a, c.x % 1000 AS b,
-         |  c.ncomp AS n_comps_without, c.ncomp > bs.base_comps AS is_bridge
-         |FROM comps c, base bs WHERE c.x <> -1 ORDER BY a, b""".stripMargin,
-
-    "fn_aba_routing" -> {
-      def dig(i: Int) =
-        s"${duckMd5Bits("'aba:' || CAST(k AS VARCHAR)", 1, i)} % 10"
-      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
-         |w AS (
-         |  SELECT k,
-         |    3 * (${dig(1)} + ${dig(4)} + ${dig(7)})
-         |      + 7 * (${dig(2)} + ${dig(5)} + ${dig(8)})
-         |      + (${dig(3)} + ${dig(6)}) AS wsum8,
-         |    k % 9 = 4 AS corrupt,
-         |    ${duckMd5Bits("abp", "k", 4)} % 9 + 1 AS cpos,
-         |    ${duckMd5Bits("abd", "k", 4)} % 9 + 1 AS cdelta
-         |  FROM t),
-         |v AS (
-         |  SELECT k, corrupt,
-         |    wsum8 + (10 - wsum8 % 10) % 10
-         |      + CASE WHEN corrupt THEN
-         |          (CASE WHEN cpos IN (1, 4, 7) THEN 3
-         |                WHEN cpos IN (2, 5, 8) THEN 7 ELSE 1 END) * cdelta
-         |        ELSE 0 END AS wsum
-         |  FROM w)
-         |SELECT CAST(k % 4 AS INT) AS cohort,
-         |  CAST(COUNT(*) AS BIGINT) AS n_numbers,
-         |  CAST(SUM(CASE WHEN wsum % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-         |  CAST(SUM(CASE WHEN wsum % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
-         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
-         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "agg_holt_winters" -> {
-      // one CTE per smoothing step: DuckDB substitutes lateral column
-      // aliases textually, so the flat 70-alias SELECT exceeds the
-      // binder's 128-deep recursion — chained CTEs keep every level
-      // shallow while computing the identical column sequence
-      val cols = holtWintersCols("//").toMap
-      val initCte = "st3 AS (SELECT *, " +
-        Seq("l3", "b3", "s0", "s1", "s2", "s3")
-          .map(n => s"${cols(n)} AS $n").mkString(", ") + " FROM wide)"
-      val stepCtes = (4 to 23).map { t =>
-        s"st$t AS (SELECT *, ${cols(s"l$t")} AS l$t, ${cols(s"b$t")} AS b$t, " +
-          s"${cols(s"s$t")} AS s$t FROM st${t - 1})"
-      }.mkString(",\n")
-      val fcCols = (1 to 4)
-        .map(h => s"${cols(s"fc$h")} AS fc$h").mkString(", ")
-      s"""WITH obs AS (
-         |  SELECT m, cls, amp, t,
-         |    500 + cls * 8 * t
-         |      + (CASE WHEN t % 4 = 0 THEN amp WHEN t % 4 = 2 THEN -amp ELSE 0 END)
-         |      + ${duckMd5Bits("'hw:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 41 - 20 AS x
-         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
-         |      CAST(s_suppkey % 3 AS INT) AS cls,
-         |      (s_suppkey % 2 + 1) * 100 AS amp FROM supplier) q,
-         |    generate_series(0, 23) AS g(t)),
-         |wide AS (
-         |  SELECT m, cls, amp,
-         |${(0 to 23).map(t => s"    MAX(CASE WHEN t = $t THEN x END) AS x$t").mkString(",\n")}
-         |  FROM obs GROUP BY 1, 2, 3),
-         |$initCte,
-         |$stepCtes,
-         |st AS (SELECT *, $fcCols FROM st23)
-         |SELECT cls, CAST(m % 2 AS INT) AS ampcls,
-         |  CAST(COUNT(*) AS BIGINT) AS n_machines,
-         |  CAST(SUM(l23) AS BIGINT) AS l_mass,
-         |  CAST(SUM(b23) AS BIGINT) AS b_mass,
-         |  CAST(SUM(fc1 + fc2 + fc3 + fc4) AS BIGINT) AS fc_mass,
-         |  CAST(SUM(abs(s20) + abs(s21) + abs(s22) + abs(s23)) AS BIGINT) AS s_amp_mass
-         |FROM st GROUP BY 1, 2 ORDER BY cls, ampcls""".stripMargin
-    },
-
-    "mm_bitrate_ladder" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    CASE o_orderkey % 4 WHEN 0 THEN 2160 WHEN 1 THEN 1080
-        |      WHEN 2 THEN 720 ELSE 480 END AS src_h,
-        |    ${duckMd5Bits("vd", "o_orderkey", 6)} % 540 + 60 AS dur_s,
-        |    ${duckMd5Bits("vc", "o_orderkey", 6)} % 100 AS cx
-        |  FROM orders),
-        |r0 AS (SELECT * FROM (VALUES (2160, 12000), (1080, 5000), (720, 2500),
-        |  (480, 1000), (360, 600)) AS v(h, kbps_base)),
-        |el AS (
-        |  SELECT t.k, t.dur_s, r0.h,
-        |    (r0.kbps_base * (80 + t.cx)) // 130 AS kbps
-        |  FROM t, r0 WHERE r0.h <= t.src_h),
-        |b AS (SELECT *, kbps * dur_s * 125 AS bytes FROM el),
-        |c AS (SELECT *, SUM(bytes) OVER (PARTITION BY k ORDER BY h DESC) AS cum_bytes FROM b)
-        |SELECT CAST(k % 4 AS INT) AS src_cls,
-        |  CAST(COUNT(DISTINCT k) AS BIGINT) AS n_titles,
-        |  CAST(COUNT(*) AS BIGINT) AS eligible_rungs,
-        |  CAST(SUM(CASE WHEN cum_bytes <= 600000000 THEN 1 ELSE 0 END) AS BIGINT) AS kept_rungs,
-        |  CAST(SUM(CASE WHEN cum_bytes <= 600000000 THEN bytes ELSE 0 END) AS BIGINT) AS kept_byte_mass
-        |FROM c GROUP BY 1 ORDER BY src_cls""".stripMargin,
-
-    "llm_router_cascade" ->
-      s"""WITH q0 AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    ${duckMd5Bits("rd", "o_orderkey", 6)} % 100 AS diff,
-        |    ${duckMd5Bits("rn", "o_orderkey", 6)} % 21 - 10 AS nz
-        |  FROM orders),
-        |q1 AS (
-        |  SELECT k, diff,
-        |    GREATEST(CAST(0 AS BIGINT), LEAST(CAST(100 AS BIGINT), 100 - diff + nz)) < 60 AS escalate,
-        |    92 - diff // 5 AS q_small, 97 - diff // 10 AS q_big
-        |  FROM q0)
-        |SELECT CAST(k % 4 AS INT) AS cohort,
-        |  CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(SUM(CASE WHEN escalate THEN 1 ELSE 0 END) AS BIGINT) AS n_escalated,
-        |  CAST(SUM(CASE WHEN escalate THEN 12 ELSE 1 END) AS BIGINT) AS cascade_cost,
-        |  CAST(SUM(CASE WHEN escalate THEN q_big ELSE q_small END) AS BIGINT) AS cascade_quality,
-        |  CAST(SUM(q_small) AS BIGINT) AS all_small_quality,
-        |  CAST(SUM(q_big) AS BIGINT) AS all_big_quality,
-        |  CAST(COUNT(*) * 12 AS BIGINT) AS all_big_cost
-        |FROM q1 GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "agg_budget_pacing" -> {
-      val pcMap: Map[String, String] = pacingCols("//").toMap
-      val stepCtes = (0 to 23).map { h =>
-        val from = if (h == 0) "wide" else s"pc${h - 1}"
-        s"pc$h AS (SELECT *, ${pcMap(s"tg$h")} AS tg$h, ${pcMap(s"sp$h")} AS sp$h, " +
-          s"${pcMap(s"sp${h}c")} AS sp${h}c FROM $from)"
-      }.mkString(",\n")
-      s"""WITH wide AS (
-         |  SELECT CAST(p_partkey AS BIGINT) AS p,
-         |    CAST(p_partkey % 3 AS INT) AS cls,
-         |    (p_partkey % 3 + 1) * 100000 AS budget,
-         |${(0 to 23).map(h => s"    ${duckMd5Bits(s"bp$h", "p_partkey", 6)} % 9000 + 1000 AS dm$h").mkString(",\n")}
-         |  FROM part),
-         |$stepCtes
-         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_campaigns,
-         |  CAST(SUM(budget) AS BIGINT) AS budget_mass,
-         |  CAST(SUM(sp23c) AS BIGINT) AS spend_mass,
-         |  CAST(SUM(${(0 to 23).map(h => s"(CASE WHEN sp$h < dm$h THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS throttled_hours,
-         |  CAST(SUM((sp23c * 1000000) // budget) AS BIGINT) AS fill_ppm_mass
-         |FROM pc23 GROUP BY 1 ORDER BY cls""".stripMargin
-    },
-
-    "llm_judge_position_bias" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    CAST(o_orderkey % 2 AS INT) AS jcls,
-        |    ${duckMd5Bits("jb", "o_orderkey", 6)} % 2 = 0 AS a_better,
-        |    ${duckMd5Bits("j1", "o_orderkey", 6)} % 100 AS d1,
-        |    ${duckMd5Bits("j2", "o_orderkey", 6)} % 100 AS d2
-        |  FROM orders),
-        |x AS (
-        |  SELECT k, jcls, a_better,
-        |    d1 < (CASE WHEN a_better THEN 75 ELSE 25 END) + jcls * 15 AS pf1,
-        |    d2 < (CASE WHEN a_better THEN 25 ELSE 75 END) + jcls * 15 AS pf2
-        |  FROM t),
-        |v AS (
-        |  SELECT k, jcls, a_better, pf1, pf2,
-        |    pf1 AS pa1, NOT pf2 AS pa2
-        |  FROM x),
-        |g AS (
-        |  SELECT jcls, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |    CAST(SUM(CASE WHEN pa1 = pa2 THEN 1 ELSE 0 END) AS BIGINT) AS n_consistent,
-        |    CAST(SUM(CASE WHEN pf1 THEN 1 ELSE 0 END) AS BIGINT) AS first_wins_o1,
-        |    CAST(SUM(CASE WHEN pf2 THEN 1 ELSE 0 END) AS BIGINT) AS first_wins_o2,
-        |    CAST(SUM(CASE WHEN pa1 = a_better THEN 1 ELSE 0 END) AS BIGINT) AS correct_o1
-        |  FROM v GROUP BY 1)
-        |SELECT jcls, n_pairs, n_consistent, first_wins_o1, first_wins_o2,
-        |  correct_o1,
-        |  ((first_wins_o1 + first_wins_o2) * 1000000) // (2 * n_pairs) AS first_win_ppm
-        |FROM g ORDER BY jcls""".stripMargin,
-
-    "mm_subtitle_drift" ->
-      s"""WITH cues AS (
-        |  SELECT v, cls, t,
-        |    (CASE WHEN cls = 1 THEN 2 * t WHEN cls = 2 THEN 5 * t ELSE 0 END)
-        |      + ${duckMd5Bits("'sd:' || CAST(v AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 9 - 4 AS off
-        |  FROM (SELECT CAST(doc_id AS BIGINT) AS v,
-        |      CAST(doc_id % 3 AS INT) AS cls FROM documents) q,
-        |    generate_series(0, 23) AS g(t)),
-        |per AS (
-        |  SELECT v, cls, CAST(SUM(off) AS BIGINT) AS sx,
-        |    CAST(SUM(t * off) AS BIGINT) AS stx
-        |  FROM cues GROUP BY 1, 2),
-        |x AS (
-        |  SELECT v, cls, 24 * stx - 276 * sx AS slope_num FROM per)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_videos,
-        |  CAST(SUM(CASE WHEN abs(slope_num) > 27600 THEN 1 ELSE 0 END) AS BIGINT) AS n_resync,
-        |  CAST(SUM(abs(slope_num)) AS BIGINT) AS slope_num_mass
-        |FROM x GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "join_garnishment_priority" ->
-      s"""WITH emp AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    (${duckMd5Bits("gd", "c_custkey", 6)} % 3000 + 1000) AS di
-        |  FROM customer),
-        |e2 AS (SELECT k, (di * 25) // 100 AS ceiling FROM emp),
-        |ords AS (
-        |  SELECT e2.k, e2.ceiling, g.pri,
-        |    ${duckMd5Bits("'ga:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)", 6)} % 400 + 50 AS amount
-        |  FROM e2, generate_series(1, 3) AS g(pri)
-        |  WHERE ${duckMd5Bits("'go:' || CAST(e2.k AS VARCHAR) || ':' || CAST(g.pri AS VARCHAR)", 6)} % 10 < 6),
-        |al AS (
-        |  SELECT k, pri, amount, ceiling,
-        |    CAST(coalesce(SUM(amount) OVER (PARTITION BY k ORDER BY pri
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-        |  FROM ords),
-        |x AS (
-        |  SELECT pri, amount,
-        |    GREATEST(0, LEAST(amount, ceiling - cum_before)) AS alloc
-        |  FROM al)
-        |SELECT CAST(pri AS INT) AS pri, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(amount) AS BIGINT) AS requested_mass,
-        |  CAST(SUM(alloc) AS BIGINT) AS allocated_mass,
-        |  CAST(SUM(amount - alloc) AS BIGINT) AS shortfall_mass,
-        |  CAST(SUM(CASE WHEN alloc = amount THEN 1 ELSE 0 END) AS BIGINT) AS n_fully_paid
-        |FROM x GROUP BY 1 ORDER BY pri""".stripMargin,
-
-    "win_vwap_execution" ->
-      s"""WITH ticks AS (
-        |  SELECT m, cls, t,
-        |    10000 + ${duckMd5Bits("'vp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 200 - 100 AS p,
-        |    ${duckMd5Bits("'vv:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS v,
-        |    ${duckMd5Bits("'vx:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3 = 0 AS pick,
-        |    ${duckMd5Bits("'ve:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 90 + 10 AS ev0
-        |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
-        |      CAST(s_suppkey % 2 AS INT) AS cls FROM supplier) q,
-        |    generate_series(0, 23) AS g(t)),
-        |rk AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY m ORDER BY p DESC, t) AS prank
-        |  FROM ticks),
-        |ex AS (
-        |  SELECT m, cls, p, v,
-        |    CASE WHEN (CASE WHEN cls = 1 THEN pick AND prank <= 12 ELSE pick END)
-        |      THEN ev0 ELSE 0 END AS ev
-        |  FROM rk),
-        |per AS (
-        |  SELECT m, cls, CAST(SUM(p * v) AS BIGINT) AS pv_mkt,
-        |    CAST(SUM(v) AS BIGINT) AS v_mkt,
-        |    CAST(SUM(p * ev) AS BIGINT) AS pv_exec,
-        |    CAST(SUM(ev) AS BIGINT) AS v_exec
-        |  FROM ex GROUP BY 1, 2),
-        |f AS (SELECT *, pv_exec * v_mkt > pv_mkt * v_exec AS above_mkt
-        |  FROM per WHERE v_exec > 0)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(pv_mkt) AS BIGINT) AS pv_mkt_mass,
-        |  CAST(SUM(v_mkt) AS BIGINT) AS v_mkt_mass,
-        |  CAST(SUM(pv_exec) AS BIGINT) AS pv_exec_mass,
-        |  CAST(SUM(v_exec) AS BIGINT) AS v_exec_mass,
-        |  CAST(SUM(CASE WHEN above_mkt THEN 1 ELSE 0 END) AS BIGINT) AS n_above_mkt
-        |FROM f GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "fn_ssn_validate" ->
-      s"""WITH t AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    1 + ${duckMd5Bits("sa", "c_custkey", 6)} % 898 AS area0,
-        |    1 + ${duckMd5Bits("sg", "c_custkey", 6)} % 99 AS grp0,
-        |    1 + ${duckMd5Bits("sn", "c_custkey", 6)} % 9999 AS ser0
-        |  FROM customer),
-        |x AS (
-        |  SELECT k,
-        |    CASE WHEN k % 23 = 4 THEN 666
-        |      WHEN k % 23 = 5 THEN 900 + ${duckMd5Bits("s9", "k", 4)} % 100
-        |      ELSE area0 END AS area,
-        |    CASE WHEN k % 23 = 6 THEN 0 ELSE grp0 END AS grp,
-        |    CASE WHEN k % 23 = 7 THEN 0 ELSE ser0 END AS ser
-        |  FROM t),
-        |v AS (
-        |  SELECT k,
-        |    CASE WHEN area = 666 THEN 'bad_area_666'
-        |      WHEN area >= 900 THEN 'bad_area_9xx'
-        |      WHEN grp = 0 THEN 'bad_group'
-        |      WHEN ser = 0 THEN 'bad_serial'
-        |      ELSE 'valid' END AS verdict
-        |  FROM x)
-        |SELECT verdict, CAST(COUNT(*) AS BIGINT) AS n_ssns,
-        |  CAST(SUM(CASE WHEN k % 23 >= 4 AND k % 23 <= 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
-        |FROM v GROUP BY 1 ORDER BY verdict""".stripMargin,
-
-    "service_deadline_budgets" -> {
-      def lat(salt: String, base: Int, w: Int) =
-        s"""(${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $w + $base
-           | + (CASE WHEN ${duckMd5Bits(s"'${salt}t' || CAST(k AS VARCHAR)", 6)} % 20 = 0
-           |    THEN 400 ELSE 0 END))""".stripMargin
-      s"""WITH t AS (
-         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-         |    ${lat("dg:", 50, 150)} AS lg,
-         |    ${lat("ds:", 50, 200)} AS ls,
-         |    ${lat("dd:", 50, 300)} AS ldb
-         |  FROM orders),
-         |x AS (
-         |  SELECT k, lg, ls, ldb,
-         |    CASE WHEN lg > LEAST(400, 800) THEN 'timeout_gw'
-         |      WHEN ls > LEAST(350, 800 - lg) THEN 'timeout_svc'
-         |      WHEN ldb > LEAST(300, 800 - lg - ls) THEN 'timeout_db'
-         |      ELSE 'ok' END AS outcome
-         |  FROM t)
-         |SELECT CAST(k % 3 AS INT) AS cohort,
-         |  CAST(COUNT(*) AS BIGINT) AS n_requests,
-         |  CAST(SUM(CASE WHEN outcome = 'ok' THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-         |  CAST(SUM(CASE WHEN outcome = 'timeout_gw' THEN 1 ELSE 0 END) AS BIGINT) AS n_timeout_gw,
-         |  CAST(SUM(CASE WHEN outcome = 'timeout_svc' THEN 1 ELSE 0 END) AS BIGINT) AS n_timeout_svc,
-         |  CAST(SUM(CASE WHEN outcome = 'timeout_db' THEN 1 ELSE 0 END) AS BIGINT) AS n_timeout_db,
-         |  CAST(SUM(CASE WHEN outcome = 'ok' THEN lg + ls + ldb ELSE 0 END) AS BIGINT) AS ok_latency_mass
-         |FROM x GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "agg_erlang_c" ->
-      """WITH t AS (
-        |  SELECT CAST(s_suppkey AS BIGINT) AS m,
-        |    CAST(s_suppkey % 4 AS INT) AS cls,
-        |    CAST(s_suppkey % 4 + 2 AS BIGINT) AS c,
-        |    (s_suppkey % 4 + 2) * 700 AS a
-        |  FROM supplier),
-        |x AS (
-        |  SELECT m, cls, c, a,
-        |    CASE c
-        |      WHEN 2 THEN 2000000 + a * 2000
-        |      WHEN 3 THEN 6000000000 + a * 6000000 + a * a * 3000
-        |      WHEN 4 THEN 24000000000000 + a * 24000000000 + a * a * 12000000 + a * a * a * 4000
-        |      WHEN 5 THEN 120000000000000000 + a * 120000000000000 + a * a * 60000000000
-        |        + a * a * a * 20000000 + a * a * a * a * 5000
-        |    END AS sumt,
-        |    CASE c WHEN 2 THEN a * a WHEN 3 THEN a * a * a
-        |      WHEN 4 THEN a * a * a * a ELSE a * a * a * a * a END AS tc
-        |  FROM t),
-        |p AS (
-        |  SELECT m, cls, c, a,
-        |    CAST((CAST(1000 AS HUGEINT) * tc * 1000000)
-        |      // (CAST(300 AS HUGEINT) * sumt + CAST(1000 AS HUGEINT) * tc) AS BIGINT) AS pwait_ppm
-        |  FROM x),
-        |w AS (SELECT *, (pwait_ppm * 1000) // (c * 300) AS wq_factor_ppm FROM p)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_pools,
-        |  CAST(MAX(c) AS BIGINT) AS c_servers, CAST(MAX(a) AS BIGINT) AS a_milli,
-        |  CAST(MAX(pwait_ppm) AS BIGINT) AS pwait_ppm,
-        |  CAST(MAX(wq_factor_ppm) AS BIGINT) AS wq_factor_ppm
-        |FROM w GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "win_orderbook_imbalance" ->
-      s"""WITH t AS (
-        |  SELECT m, cls, t,
-        |    ${duckMd5Bits("'ob:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS bid,
-        |    ${duckMd5Bits("'oa:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 900 + 100 AS ask,
-        |    ${duckMd5Bits("'om:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 10 < 7 AS agree
-        |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
-        |      CAST(s_suppkey % 2 AS INT) AS cls FROM supplier) q,
-        |    generate_series(0, 23) AS g(t)),
-        |s1 AS (
-        |  SELECT m, cls, t, bid, ask,
-        |    CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END AS imb_sign,
-        |    CASE WHEN agree THEN (CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END)
-        |      ELSE -(CASE WHEN bid > ask THEN 1 WHEN bid < ask THEN -1 ELSE 0 END) END AS next_move
-        |  FROM t),
-        |s2 AS (
-        |  SELECT m, cls, bid, ask,
-        |    LAG(imb_sign, 1) OVER (PARTITION BY m ORDER BY t) AS pred,
-        |    LAG(next_move, 1) OVER (PARTITION BY m ORDER BY t) AS actual_prev
-        |  FROM s1),
-        |f AS (SELECT * FROM s2 WHERE pred IS NOT NULL AND pred <> 0),
-        |g2 AS (
-        |  SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_signals,
-        |    CAST(SUM(CASE WHEN actual_prev = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |    CAST(SUM(bid) AS BIGINT) AS bid_mass, CAST(SUM(ask) AS BIGINT) AS ask_mass
-        |  FROM f GROUP BY 1)
-        |SELECT cls, n_signals, n_hits, bid_mass, ask_mass,
-        |  (n_hits * 1000000) // n_signals AS hit_ppm
-        |FROM g2 ORDER BY cls""".stripMargin,
-
-    "agg_settlement_fails" -> {
-      def fail(j: Int) =
-        s"(${duckMd5Bits(s"sf$j", "k", 6)} % 10 < 3 + 3 * (k % 2))"
-      s"""WITH t AS (
-         |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-         |    CAST(o_orderkey % 2 AS INT) AS cp_cls
-         |  FROM orders),
-         |x AS (
-         |  SELECT k, cp_cls,
-         |    CASE WHEN NOT ${fail(1)} THEN 0
-         |      WHEN NOT ${fail(2)} THEN 1
-         |      WHEN NOT ${fail(3)} THEN 2
-         |      WHEN NOT ${fail(4)} THEN 3
-         |      ELSE 4 END AS delay
-         |  FROM t)
-         |SELECT cp_cls, CAST(COUNT(*) AS BIGINT) AS n_trades,
-         |  CAST(SUM(CASE WHEN delay = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_on_time,
-         |  CAST(SUM(delay) AS BIGINT) AS delay_day_mass,
-         |  CAST(SUM(CASE WHEN delay = 1 THEN 1 ELSE 0 END) AS BIGINT) AS age1,
-         |  CAST(SUM(CASE WHEN delay = 2 THEN 1 ELSE 0 END) AS BIGINT) AS age2,
-         |  CAST(SUM(CASE WHEN delay = 3 THEN 1 ELSE 0 END) AS BIGINT) AS age3,
-         |  CAST(SUM(CASE WHEN delay = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_buy_ins
-         |FROM x GROUP BY 1 ORDER BY cp_cls""".stripMargin
-    },
-
-    "fn_bic_validate" -> {
-      def ch(i: Int) =
-        s"chr(65 + CAST(${duckMd5Bits("'bc:' || CAST(k AS VARCHAR)", 2, i)} % 26 AS INT))"
-      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
-         |b AS (
-         |  SELECT k,
-         |    (['US', 'GB', 'DE', 'FR', 'XX'])[CAST(k % 5 AS INT) + 1] AS country,
-         |    ${ch(1)} || ${ch(3)} || ${ch(5)} || ${ch(7)} AS bank,
-         |    lpad(CAST(${duckMd5Bits("bl", "k", 4)} % 100 AS VARCHAR), 2, '0') AS loc
-         |  FROM t),
-         |c AS (SELECT k, country, bank || country || loc AS bic0 FROM b),
-         |e AS (
-         |  SELECT k, country,
-         |    CASE WHEN k % 9 = 4
-         |      THEN lower(substring(bic0, 1, 1)) || substring(bic0, 2, 7)
-         |      ELSE bic0 END AS bic
-         |  FROM c),
-         |v AS (
-         |  SELECT k,
-         |    regexp_matches(bic, '^[A-Z]{4}[A-Z]{2}[A-Z0-9]{2}$$') AS form_ok,
-         |    country IN ('US', 'GB', 'DE', 'FR') AS country_ok
-         |  FROM e)
-         |SELECT CAST(k % 3 AS INT) AS cohort,
-         |  CAST(COUNT(*) AS BIGINT) AS n_bics,
-         |  CAST(SUM(CASE WHEN form_ok AND country_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-         |  CAST(SUM(CASE WHEN NOT form_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_bad_form,
-         |  CAST(SUM(CASE WHEN NOT country_ok THEN 1 ELSE 0 END) AS BIGINT) AS n_bad_country,
-         |  CAST(SUM(CASE WHEN k % 9 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS planted_form,
-         |  CAST(SUM(CASE WHEN k % 5 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS planted_country
-         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "llm_retriever_ab_mrr" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    CAST(o_orderkey % 3 AS INT) AS cls,
-        |    ${duckMd5Bits("ma", "o_orderkey", 6)} % 20 + 1 AS ra,
-        |    CASE WHEN ${duckMd5Bits("mb", "o_orderkey", 6)} % 10 < 7
-        |      THEN ${duckMd5Bits("mc", "o_orderkey", 6)} % 8 + 1
-        |      ELSE ${duckMd5Bits("mc", "o_orderkey", 6)} % 20 + 1
-        |    END AS rb
-        |  FROM orders)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(SUM(1000000 // ra) AS BIGINT) AS mrr_a_mass,
-        |  CAST(SUM(1000000 // rb) AS BIGINT) AS mrr_b_mass,
-        |  CAST(SUM(CASE WHEN ra = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a_at_1,
-        |  CAST(SUM(CASE WHEN rb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS b_at_1
-        |FROM t GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "join_four_eyes" ->
-      s"""WITH t AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey % 200 AS req,
-        |    CASE WHEN o_orderkey % 41 = 3 THEN o_orderkey % 200
-        |      WHEN o_orderkey % 43 = 5
-        |        THEN (o_orderkey % 200) - (o_orderkey % 200) % 10 + ((o_orderkey % 200) + 1) % 10
-        |      ELSE ${duckMd5Bits("ap", "o_orderkey", 6)} % 200
-        |    END AS appr
-        |  FROM orders)
-        |SELECT CAST(k % 4 AS INT) AS cohort,
-        |  CAST(COUNT(*) AS BIGINT) AS n_approvals,
-        |  CAST(SUM(CASE WHEN req = appr THEN 1 ELSE 0 END) AS BIGINT) AS r1_violations,
-        |  CAST(SUM(CASE WHEN req // 10 = appr // 10 AND req <> appr THEN 1 ELSE 0 END) AS BIGINT) AS r2_violations,
-        |  CAST(SUM(CASE WHEN k % 41 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS planted_r1,
-        |  CAST(SUM(CASE WHEN k % 43 = 5 AND k % 41 <> 3 THEN 1 ELSE 0 END) AS BIGINT) AS planted_r2
-        |FROM t GROUP BY 1 ORDER BY cohort""".stripMargin,
-
-    "llm_embed_drift" ->
-      """WITH pos AS (SELECT CAST(i AS BIGINT) AS dim FROM generate_series(0, 63) AS t(i)),
-        |dims AS (
-        |  SELECT e.vec_id, p.dim,
-        |    CAST(FLOOR(CAST(e.embedding[p.dim + 1] AS DOUBLE) * 1000000) AS BIGINT) AS a,
-        |    CAST(FLOOR((CAST(e.embedding[p.dim + 1] AS DOUBLE)
-        |      + CASE WHEN p.dim < 8 AND e.vec_id % 2 = 0 THEN 0.05 ELSE 0.0 END) * 1000000) AS BIGINT) AS b
-        |  FROM embeddings e, pos p WHERE p.dim + 1 <= len(e.embedding)),
-        |per AS (
-        |  SELECT dim, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(a) AS BIGINT) AS sa, CAST(SUM(b) AS BIGINT) AS sb
-        |  FROM dims GROUP BY 1),
-        |x AS (
-        |  SELECT dim, (sb - sa) // n AS delta_micro FROM per)
-        |SELECT CAST(dim // 8 AS INT) AS dim_block,
-        |  CAST(COUNT(*) AS BIGINT) AS n_dims,
-        |  CAST(SUM(CASE WHEN abs(delta_micro) > 20000 THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
-        |  CAST(SUM(abs(delta_micro)) AS BIGINT) AS abs_delta_mass
-        |FROM x GROUP BY 1 ORDER BY dim_block""".stripMargin,
-
-    "service_maxmin_fair" ->
-      s"""WITH ten AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS tn, c_custkey % 40 AS pool,
-        |    CAST((c_custkey % 40) % 2 AS INT) AS cls,
-        |    ${duckMd5Bits("mf", "c_custkey", 6)}
-        |      % (120 + ((c_custkey % 40) % 2) * 400) + 20 AS dem
-        |  FROM customer),
-        |ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY pool ORDER BY dem, tn) AS rn,
-        |    CAST(SUM(dem) OVER (PARTITION BY pool ORDER BY dem, tn
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |    COUNT(*) OVER (PARTITION BY pool) AS cnt
-        |  FROM ten),
-        |lv AS (
-        |  SELECT *, cnt * 250 AS cap,
-        |    (cnt * 250 - (cum - dem)) // (cnt - rn + 1) AS level
-        |  FROM ranked),
-        |sf AS (SELECT *, dem <= level AS satisfied FROM lv),
-        |pt AS (
-        |  SELECT pool, MAX(cap) AS cap,
-        |    CAST(SUM(CASE WHEN satisfied THEN dem ELSE 0 END) AS BIGINT) AS sat_mass,
-        |    CAST(SUM(CASE WHEN NOT satisfied THEN 1 ELSE 0 END) AS BIGINT) AS n_unsat
-        |  FROM sf GROUP BY 1),
-        |th AS (SELECT pool,
-        |    CASE WHEN n_unsat > 0 THEN (cap - sat_mass) // n_unsat ELSE 0 END AS theta
-        |  FROM pt),
-        |al AS (
-        |  SELECT sf.cls, sf.pool, sf.dem, sf.satisfied,
-        |    CASE WHEN sf.satisfied THEN sf.dem ELSE th.theta END AS alloc
-        |  FROM sf JOIN th ON th.pool = sf.pool)
-        |SELECT cls, CAST(COUNT(DISTINCT pool) AS BIGINT) AS n_pools,
-        |  CAST(COUNT(*) AS BIGINT) AS n_tenants,
-        |  CAST(SUM(dem) AS BIGINT) AS demand_mass,
-        |  CAST(SUM(alloc) AS BIGINT) AS alloc_mass,
-        |  CAST(SUM(CASE WHEN satisfied THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
-        |  CAST(SUM(CASE WHEN NOT satisfied THEN 1 ELSE 0 END) AS BIGINT) AS n_throttled
-        |FROM al GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "join_ownership_sanctions" ->
-      """WITH ents AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    CASE WHEN c_custkey % 50 = 0 THEN 0 WHEN c_custkey % 50 = 1 THEN 1
-        |      WHEN c_custkey % 50 = 2 THEN 2 ELSE 9 END AS lvl
-        |  FROM customer),
-        |edges AS (
-        |  SELECT k AS child, k - 1 AS owner,
-        |    CASE WHEN k % 100 = 1 THEN 60 ELSE 40 END AS pct
-        |  FROM ents WHERE lvl = 1
-        |  UNION ALL SELECT k, k - 1, 80 FROM ents WHERE lvl = 2),
-        |blk0 AS (SELECT k FROM ents WHERE lvl = 0),
-        |n1 AS (SELECT child AS k FROM edges
-        |  JOIN blk0 ON blk0.k = edges.owner
-        |  GROUP BY child HAVING SUM(pct) >= 50),
-        |blk1 AS (SELECT k FROM blk0 UNION SELECT k FROM n1),
-        |n2 AS (SELECT child AS k FROM edges
-        |  JOIN blk1 ON blk1.k = edges.owner
-        |  GROUP BY child HAVING SUM(pct) >= 50),
-        |blk2 AS (SELECT k FROM blk1 UNION SELECT k FROM n2),
-        |n3 AS (SELECT child AS k FROM edges
-        |  JOIN blk2 ON blk2.k = edges.owner
-        |  GROUP BY child HAVING SUM(pct) >= 50),
-        |blk3 AS (SELECT k FROM blk2 UNION SELECT k FROM n3)
-        |SELECT lvl, CAST(COUNT(*) AS BIGINT) AS n_entities,
-        |  CAST(SUM(CASE WHEN b.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked
-        |FROM ents e LEFT JOIN blk3 b ON b.k = e.k
-        |GROUP BY 1 ORDER BY lvl""".stripMargin,
-
-    "join_temporal_reachability" ->
-      s"""WITH e AS (
-        |  SELECT
-        |    CASE WHEN t % 90 < 3 THEN ((t // 90) * 10) % 1000 + (t % 90)
-        |      ELSE ${duckMd5Bits("ts", "t", 6)} % 1000 END AS src,
-        |    CASE WHEN t % 90 < 3 THEN ((t // 90) * 10) % 1000 + (t % 90) + 1
-        |      ELSE ${duckMd5Bits("td", "t", 6)} % 1000 END AS dst,
-        |    t
-        |  FROM (SELECT CAST(o_orderkey AS BIGINT) AS t FROM orders) q0),
-        |e2 AS (SELECT * FROM e WHERE src <> dst),
-        |h2 AS (
-        |  SELECT a.src AS s, a.t AS t1, b.dst AS mid2, b.t AS t2
-        |  FROM e2 a JOIN e2 b ON b.src = a.dst AND b.t > a.t AND b.t <= a.t + 5),
-        |h3 AS (
-        |  SELECT h2.s, c.dst AS d3, h2.t1
-        |  FROM h2 JOIN e2 c ON c.src = h2.mid2 AND c.t > h2.t2 AND c.t <= h2.t2 + 5)
-        |SELECT
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM h2) AS n_2hop_paths,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM h3) AS n_3hop_paths,
-        |  (SELECT CAST(SUM(CASE WHEN d3 = s + 3 THEN 1 ELSE 0 END) AS BIGINT) FROM h3) AS n_chain_completions,
-        |  (SELECT CAST(SUM(CASE WHEN t % 90 = 0 THEN 1 ELSE 0 END) AS BIGINT) FROM e2) AS n_planted_starts""".stripMargin,
-
-    "agg_demand_censoring" ->
-      s"""WITH obs AS (
-        |  SELECT p, cls, t,
-        |    ${duckMd5Bits("'dm:' || CAST(p AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 40
-        |      + cls * 10 AS demand
-        |  FROM (SELECT CAST(p_partkey AS BIGINT) AS p,
-        |      CAST(p_partkey % 3 AS INT) AS cls FROM part) q,
-        |    generate_series(0, 23) AS g(t)),
-        |x AS (SELECT cls, demand, LEAST(demand, 35) AS sales FROM obs),
-        |r AS (
-        |  SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_days,
-        |    CAST(SUM(demand) AS BIGINT) AS true_mass,
-        |    CAST(SUM(sales) AS BIGINT) AS observed_mass,
-        |    CAST(SUM(CASE WHEN demand >= 35 THEN 1 ELSE 0 END) AS BIGINT) AS censored_days
-        |  FROM x GROUP BY 1)
-        |SELECT cls, n_days, true_mass, observed_mass, censored_days,
-        |  ((true_mass - observed_mass) * 1000000) // true_mass AS bias_ppm
-        |FROM r ORDER BY cls""".stripMargin,
-
-    "llm_moe_capacity_drop" ->
-      s"""WITH toks AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k, o_orderkey // 256 AS batch,
-        |    CASE WHEN ${duckMd5Bits("me", "o_orderkey", 6)} % 10 < 3
-        |      THEN CAST(0 AS BIGINT)
-        |      ELSE ${duckMd5Bits("m1", "o_orderkey", 6)} % 8 END AS e1,
-        |    ${duckMd5Bits("m2", "o_orderkey", 6)} % 8 AS e2x
-        |  FROM orders),
-        |t2 AS (SELECT *, CASE WHEN e2x = e1 THEN (e2x + 1) % 8 ELSE e2x END AS e2 FROM toks),
-        |bs AS (SELECT batch, COUNT(*) AS bn, (COUNT(*) * 125) // (8 * 100) + 1 AS cap
-        |  FROM t2 GROUP BY 1),
-        |ranked AS (
-        |  SELECT t2.*, bs.cap,
-        |    ROW_NUMBER() OVER (PARTITION BY t2.batch, t2.e1
-        |      ORDER BY md5('mo:' || CAST(t2.k AS VARCHAR)), t2.k) AS rn
-        |  FROM t2 JOIN bs ON bs.batch = t2.batch),
-        |pl AS (SELECT batch AS b2, e1 AS pe, CAST(COUNT(*) AS BIGINT) AS pload
-        |  FROM ranked GROUP BY 1, 2),
-        |routed AS (
-        |  SELECT r.e1,
-        |    CASE WHEN r.rn <= r.cap THEN 'admitted'
-        |      WHEN coalesce(pl.pload, 0) < r.cap THEN 'rerouted'
-        |      ELSE 'dropped' END AS outcome
-        |  FROM ranked r LEFT JOIN pl ON pl.b2 = r.batch AND pl.pe = r.e2)
-        |SELECT e1, CAST(COUNT(*) AS BIGINT) AS primary_tokens,
-        |  CAST(SUM(CASE WHEN outcome = 'admitted' THEN 1 ELSE 0 END) AS BIGINT) AS n_admitted,
-        |  CAST(SUM(CASE WHEN outcome = 'rerouted' THEN 1 ELSE 0 END) AS BIGINT) AS n_rerouted_out,
-        |  CAST(SUM(CASE WHEN outcome = 'dropped' THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
-        |FROM routed GROUP BY 1 ORDER BY e1""".stripMargin,
-
-    "fn_counter_rollover" ->
-      s"""WITH obs AS (
-        |  SELECT m, cls, t,
-        |    (1 + m % 3) * (${duckMd5Bits("'cr:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3000000) AS inc
-        |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
-        |      CAST(s_suppkey % 3 AS INT) AS cls FROM supplier) q,
-        |    generate_series(0, 23) AS g(t)),
-        |c AS (
-        |  SELECT m, cls, t,
-        |    CAST(SUM(inc) OVER (PARTITION BY m ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |  FROM obs),
-        |r AS (
-        |  SELECT m, cls, cum, cum % 16777216 AS reading,
-        |    LAG(cum % 16777216, 1) OVER (PARTITION BY m ORDER BY t) AS prev
-        |  FROM c),
-        |x AS (
-        |  SELECT m, cls, cum,
-        |    (reading - prev + 16777216) % 16777216 AS delta,
-        |    CASE WHEN reading < prev THEN 1 ELSE 0 END AS wrap
-        |  FROM r),
-        |per AS (
-        |  SELECT m, cls, CAST(SUM(delta) AS BIGINT) AS recon_growth,
-        |    CAST(MAX(cum) - MIN(cum) AS BIGINT) AS true_growth,
-        |    CAST(SUM(wrap) AS BIGINT) AS n_wraps
-        |  FROM x GROUP BY 1, 2)
-        |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_devices,
-        |  CAST(SUM(recon_growth) AS BIGINT) AS recon_mass,
-        |  CAST(SUM(true_growth) AS BIGINT) AS true_mass,
-        |  CAST(SUM(CASE WHEN recon_growth = true_growth THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-        |  CAST(SUM(n_wraps) AS BIGINT) AS wrap_mass
-        |FROM per GROUP BY 1 ORDER BY cls""".stripMargin,
-
-    "warehouse_data_contract" ->
-      """WITH feed AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    CASE WHEN o_orderkey % 97 = 5 THEN 'X' ELSE o_orderstatus END AS status,
-        |    CASE WHEN o_orderkey % 89 = 7
-        |      THEN -CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        |      ELSE CAST(ROUND(o_totalprice * 100) AS BIGINT) END AS cents
-        |  FROM orders),
-        |landed AS (
-        |  SELECT * FROM feed
-        |  UNION ALL SELECT * FROM feed WHERE k % 101 = 9),
-        |kc AS (SELECT k, COUNT(*) AS n FROM landed GROUP BY 1),
-        |rules AS (
-        |  SELECT 'key_unique' AS rule,
-        |    CAST(coalesce((SELECT SUM(n - 1) FROM kc WHERE n > 1), 0) AS BIGINT) AS n_violations
-        |  UNION ALL
-        |  SELECT 'price_positive',
-        |    (SELECT CAST(SUM(CASE WHEN cents <= 0 THEN 1 ELSE 0 END) AS BIGINT) FROM landed)
-        |  UNION ALL
-        |  SELECT 'rows_landed', (SELECT CAST(COUNT(*) AS BIGINT) FROM landed)
-        |  UNION ALL
-        |  SELECT 'status_enum',
-        |    (SELECT CAST(SUM(CASE WHEN status NOT IN ('O', 'F', 'P') THEN 1 ELSE 0 END) AS BIGINT) FROM landed))
-        |SELECT rule, n_violations, n_violations = 0 AS passed
-        |FROM rules ORDER BY rule""".stripMargin,
-
-    "warehouse_write_audit_publish" ->
-      s"""WITH a AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(0 AS BIGINT) AS n_nulls
-        |  FROM orders WHERE o_orderkey % 3 = 1),
-        |b AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |    CAST(SUM(CASE WHEN ${duckMd5Bits("wb", "o_orderkey", 6)} % 100 < 12
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls
-        |  FROM orders WHERE o_orderkey % 3 = 2),
-        |base AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM orders WHERE o_orderkey % 3 = 0)
-        |SELECT * FROM (
-        |  SELECT 'a' AS batch, a.n_rows, a.n_nulls,
-        |    (a.n_nulls * 1000000) // a.n_rows AS null_ppm,
-        |    a.n_rows > 0 AND a.n_nulls * 100 <= a.n_rows * 5 AS published
-        |  FROM a
-        |  UNION ALL
-        |  SELECT 'b', b.n_rows, b.n_nulls, (b.n_nulls * 1000000) // b.n_rows,
-        |    b.n_rows > 0 AND b.n_nulls * 100 <= b.n_rows * 5
-        |  FROM b
-        |  UNION ALL
-        |  SELECT 'live_final', base.n_rows + a.n_rows, CAST(0 AS BIGINT),
-        |    CAST(0 AS BIGINT), TRUE
-        |  FROM base, a) q
-        |ORDER BY batch""".stripMargin,
-
-    "agg_bass_diffusion" -> {
-      val bMap: Map[String, String] = bassCols("//").toMap
-      val stepCtes = (0 to 23).map { t =>
-        val from = if (t == 0) "mkts" else s"bs${t - 1}"
-        s"bs$t AS (SELECT *, ${bMap(s"nn$t")} AS nn$t FROM $from)"
-      }.mkString(",\n")
-      s"""WITH mkts AS (
-         |  SELECT CAST(s_suppkey AS BIGINT) AS m,
-         |    CAST(s_suppkey % 3 AS INT) AS cls,
-         |    CASE WHEN s_suppkey % 3 = 0 THEN 30 WHEN s_suppkey % 3 = 1 THEN 5 ELSE 15 END AS p,
-         |    CASE WHEN s_suppkey % 3 = 0 THEN 100 WHEN s_suppkey % 3 = 1 THEN 500 ELSE 300 END AS q
-         |  FROM supplier),
-         |$stepCtes
-         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_markets,
-         |  CAST(SUM(nn23) AS BIGINT) AS final_adopters_mass,
-         |  CAST(SUM(${(1 to 23).map(t => s"(nn$t - nn${t - 1})").mkString("GREATEST(", ", ", ")")}) AS BIGINT) AS peak_adoption_mass,
-         |  CAST(SUM(${(0 to 23).map(t => s"(CASE WHEN nn$t < 500000 THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS periods_below_half_mass
-         |FROM bs23 GROUP BY 1 ORDER BY cls""".stripMargin
-    },
-
-    "fn_nhs_number" -> {
-      def dig(i: Int) =
-        s"${duckMd5Bits("'nh:' || CAST(k AS VARCHAR)", 1, i)} % 10"
-      val wsum = (1 to 9).map(i => s"(${dig(i)}) * ${11 - i}").mkString(" + ")
-      val wdelta = (1 to 9).map(i => s"WHEN cpos = $i THEN ${11 - i} * cdelta")
-        .mkString("CASE ", " ", " END")
-      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
-         |a AS (
-         |  SELECT k, ($wsum) % 11 AS r,
-         |    ${duckMd5Bits("np", "k", 4)} % 9 + 1 AS cpos,
-         |    ${duckMd5Bits("nd", "k", 4)} % 9 + 1 AS cdelta
-         |  FROM t),
-         |b AS (
-         |  SELECT k, r = 1 AS unissuable, (11 - r) % 11 AS chk,
-         |    r <> 1 AND k % 7 = 2 AS corrupt, cpos, cdelta, ($wdelta) AS wdelta
-         |  FROM a),
-         |v AS (
-         |  SELECT k, unissuable, corrupt,
-         |    NOT unissuable AND
-         |      (($wsum) + chk + CASE WHEN corrupt THEN wdelta ELSE 0 END) % 11 = 0 AS valid
-         |  FROM b)
-         |SELECT CAST(k % 4 AS INT) AS cohort,
-         |  CAST(COUNT(*) AS BIGINT) AS n_numbers,
-         |  CAST(SUM(CASE WHEN unissuable THEN 1 ELSE 0 END) AS BIGINT) AS n_unissuable,
-         |  CAST(SUM(CASE WHEN valid THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-         |  CAST(SUM(CASE WHEN NOT valid AND NOT unissuable THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
-         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
-         |FROM v GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "fn_bech32_check" -> {
-      val hrpState = bech32Fold(1L, Seq(3L, 3L, 0L, 2L, 3L))
-      def grp(j: Int) =
-        s"${duckMd5Bits("'bw:' || CAST(k AS VARCHAR)", 2, 2 * j + 1)} % 32"
-      val dx: (String, String) => String = (a, b) => s"xor($a, $b)"
-      val dl: (String, Int) => String = (e, n) => s"($e << $n)"
-      val dr: (String, Int) => String = (e, n) => s"($e >> $n)"
-      val init = s"CAST($hrpState AS BIGINT)"
-      val cSteps = bech32Steps("c", init, (0 until 12).map(j => s"g$j"), dx, dl, dr)
-      val xSteps = bech32Steps("x", init, (0 until 12).map(j => s"xg$j"), dx, dl, dr)
-      val stepCtes = (0 until 12).map { i =>
-        val from = if (i == 0) "base" else s"bc${i - 1}"
-        s"bc$i AS (SELECT *, ${cSteps(i)._2} AS c$i, ${xSteps(i)._2} AS x$i FROM $from)"
-      }.mkString(",\n")
-      s"""WITH t AS (
-         |  SELECT CAST(c_custkey AS BIGINT) AS k,
-         |    c_custkey % 5 = 2 AS corrupt,
-         |    ${duckMd5Bits("bp", "c_custkey", 4)} % 12 AS cpos,
-         |    ${duckMd5Bits("bd", "c_custkey", 4)} % 31 + 1 AS cdelta
-         |  FROM customer),
-         |base AS (
-         |  SELECT *,
-         |${(0 until 12).map(j => s"    ${grp(j)} AS g$j").mkString(",\n")},
-         |${(0 until 12).map(j => s"    CASE WHEN corrupt AND cpos = $j THEN ((${grp(j)}) + cdelta) % 32 ELSE ${grp(j)} END AS xg$j").mkString(",\n")}
-         |  FROM t),
-         |$stepCtes
-         |SELECT CAST(k % 3 AS INT) AS cohort,
-         |  CAST(COUNT(*) AS BIGINT) AS n_addresses,
-         |  CAST(SUM(CASE WHEN c11 = x11 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-         |  CAST(SUM(CASE WHEN c11 <> x11 THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
-         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted,
-         |  CAST(SUM(c11) AS BIGINT) AS checksum_state_mass
-         |FROM bc11 GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "agg_hawkes_decay" -> {
-      val hkMap: Map[String, String] = hawkesCols("//").toMap
-      val stepCtes = (0 to 23).map { t =>
-        val from = if (t == 0) "wide" else s"hk${t - 1}"
-        s"hk$t AS (SELECT *, ${hkMap(s"le$t")} AS le$t, ${hkMap(s"lam$t")} AS lam$t FROM $from)"
-      }.mkString(",\n")
-      s"""WITH obs AS (
-         |  SELECT m, cls, t,
-         |    ${duckMd5Bits("'hk:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 3
-         |      + (CASE WHEN m % 3 = 2 AND t BETWEEN 8 AND 10 THEN 4 ELSE 0 END) AS n
-         |  FROM (SELECT CAST(c_custkey AS BIGINT) AS m,
-         |      CAST(c_custkey % 3 AS INT) AS cls FROM customer) q,
-         |    generate_series(0, 23) AS g(t)),
-         |wide AS (
-         |  SELECT m, cls,
-         |${(0 to 23).map(t => s"    MAX(CASE WHEN t = $t THEN n END) AS n$t").mkString(",\n")}
-         |  FROM obs GROUP BY 1, 2),
-         |$stepCtes
-         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_accounts,
-         |  CAST(SUM(${(0 to 23).map(t => s"(CASE WHEN lam$t > 2500 THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS flagged_windows,
-         |  CAST(SUM(${(0 to 23).map(t => s"lam$t").mkString("GREATEST(", ", ", ")")}) AS BIGINT) AS peak_intensity_mass,
-         |  CAST(SUM(${(0 to 23).map(t => s"lam$t").mkString(" + ")}) AS BIGINT) AS intensity_mass,
-         |  CAST(SUM(CASE WHEN lam20 > 2500 THEN 1 ELSE 0 END) AS BIGINT) AS still_hot_t20
-         |FROM hk23 GROUP BY 1 ORDER BY cls""".stripMargin
-    },
-
-    "join_propensity_match" ->
-      s"""WITH units AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    300000 + (c_custkey % 7) * 50000
-        |      + ${duckMd5Bits("ps", "c_custkey", 6)} % 100000 AS score
-        |  FROM customer),
-        |u2 AS (
-        |  SELECT k, score,
-        |    ${duckMd5Bits("pt", "k", 6)} % 1000
-        |      < 100 + score // 2000 AS treated,
-        |    score // 20000 AS bucket
-        |  FROM units),
-        |ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (
-        |    PARTITION BY bucket, treated ORDER BY score, k) AS rn
-        |  FROM u2),
-        |matched AS (
-        |  SELECT t.score AS ts, c.score AS cs
-        |  FROM ranked t JOIN ranked c
-        |    ON t.bucket = c.bucket AND t.rn = c.rn
-        |    AND t.treated AND NOT c.treated),
-        |a AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN treated THEN 1 ELSE 0 END) AS BIGINT) AS n_treated,
-        |    CAST(SUM(CASE WHEN NOT treated THEN 1 ELSE 0 END) AS BIGINT) AS n_control,
-        |    CAST(SUM(CASE WHEN treated THEN score ELSE 0 END) AS BIGINT) AS score_treated_all,
-        |    CAST(SUM(CASE WHEN NOT treated THEN score ELSE 0 END) AS BIGINT) AS score_control_all
-        |  FROM u2),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_matched,
-        |    CAST(coalesce(SUM(ts), 0) AS BIGINT) AS score_treated_matched,
-        |    CAST(coalesce(SUM(cs), 0) AS BIGINT) AS score_control_matched
-        |  FROM matched)
-        |SELECT a.n_treated, a.n_control, m.n_matched,
-        |  a.score_treated_all, a.score_control_all,
-        |  m.score_treated_matched, m.score_control_matched
-        |FROM a, m""".stripMargin,
-
-    "llm_dataset_cartography" -> {
-      val isq = Round12cOps.duckIsqrt("8 * qc - sc * sc")
-      s"""WITH obs AS (
-         |  SELECT k, cls, e,
-         |    CASE WHEN k % 3 = 0
-         |      THEN 800 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 150
-         |      WHEN k % 3 = 2
-         |      THEN 100 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 150
-         |      ELSE 200 + ${duckMd5Bits("'dc:' || CAST(k AS VARCHAR) || ':' || CAST(e AS VARCHAR)", 6)} % 600
-         |    END AS conf
-         |  FROM (SELECT CAST(doc_id AS BIGINT) AS k,
-         |      CAST(doc_id % 3 AS INT) AS cls FROM documents) q,
-         |    generate_series(0, 7) AS g(e)),
-         |per AS (
-         |  SELECT k, cls, CAST(SUM(conf) AS BIGINT) AS sc,
-         |    CAST(SUM(conf * conf) AS BIGINT) AS qc
-         |  FROM obs GROUP BY 1, 2),
-         |m AS (
-         |  SELECT k, cls, sc // 8 AS mean_conf, $isq // 8 AS variability
-         |  FROM per),
-         |r AS (
-         |  SELECT cls,
-         |    CASE WHEN mean_conf < 300 THEN 'hard'
-         |      WHEN variability >= 120 THEN 'ambiguous'
-         |      ELSE 'easy' END AS region,
-         |    mean_conf, variability
-         |  FROM m)
-         |SELECT cls, region, CAST(COUNT(*) AS BIGINT) AS n_examples,
-         |  CAST(SUM(mean_conf) AS BIGINT) AS mean_conf_mass,
-         |  CAST(SUM(variability) AS BIGINT) AS variability_mass
-         |FROM r GROUP BY 1, 2 ORDER BY cls, region""".stripMargin
-    },
-
-    "service_backpressure" -> {
-      val bpMap: Map[String, String] = backpressureCols.toMap
-      val stepCtes = (0 to 23).map { t =>
-        val from = if (t == 0) "wide" else s"bp${t - 1}"
-        s"bp$t AS (SELECT *, ${bpMap(s"r$t")} AS r$t, " +
-          s"${bpMap(s"d$t")} AS d$t, ${bpMap(s"q$t")} AS q$t FROM $from)"
-      }.mkString(",\n")
-      s"""WITH obs AS (
-         |  SELECT m, cls, t,
-         |    55 + 25 * cls + ${duckMd5Bits("'bp:' || CAST(m AS VARCHAR) || ':' || CAST(t AS VARCHAR)", 6)} % 51 AS a
-         |  FROM (SELECT CAST(s_suppkey AS BIGINT) AS m,
-         |      CAST(s_suppkey % 3 AS INT) AS cls FROM supplier) q,
-         |    generate_series(0, 23) AS g(t)),
-         |wide AS (
-         |  SELECT m, cls,
-         |${(0 to 23).map(t => s"    MAX(CASE WHEN t = $t THEN a END) AS a$t").mkString(",\n")}
-         |  FROM obs GROUP BY 1, 2),
-         |$stepCtes
-         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_services,
-         |  CAST(SUM(${(0 to 23).map(t => s"d$t").mkString(" + ")}) AS BIGINT) AS drop_mass,
-         |  CAST(SUM(${(0 to 23).map(t => s"q$t").mkString("GREATEST(", ", ", ")")}) AS BIGINT) AS peak_depth_mass,
-         |  CAST(SUM(${(0 to 23).map(t => s"(CASE WHEN q$t > 300 THEN 1 ELSE 0 END)").mkString(" + ")}) AS BIGINT) AS high_water_windows
-         |FROM bp23 GROUP BY 1 ORDER BY cls""".stripMargin
-    },
-
-    "join_device_fingerprint" ->
-      """WITH acct AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    CASE WHEN c_custkey % 15 = 7 THEN 'default_fp'
-        |      WHEN c_custkey % 9 = 4 THEN 'ring_' || CAST(c_custkey // 27 AS VARCHAR)
-        |      ELSE 'uniq_' || substring(md5('fp:' || CAST(c_custkey AS VARCHAR)), 1, 10)
-        |    END AS fp
-        |  FROM customer),
-        |pops AS (SELECT fp, COUNT(*) AS pop FROM acct GROUP BY 1),
-        |live AS (SELECT a.k, a.fp FROM acct a JOIN pops p ON p.fp = a.fp
-        |  WHERE p.pop <= 5),
-        |pairs AS (
-        |  SELECT x.fp, x.k AS a, y.k AS b
-        |  FROM live x JOIN live y ON x.fp = y.fp AND x.k < y.k),
-        |pc AS (
-        |  SELECT CAST(a % 2 AS INT) AS cohort,
-        |    CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        |    CAST(SUM(CASE WHEN fp LIKE 'ring!_%' ESCAPE '!' THEN 1 ELSE 0 END) AS BIGINT) AS n_ring_pairs,
-        |    CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_linking_fps
-        |  FROM pairs GROUP BY 1),
-        |ac AS (
-        |  SELECT CAST(k % 2 AS INT) AS cohort,
-        |    CAST(COUNT(*) AS BIGINT) AS n_accounts,
-        |    CAST(SUM(CASE WHEN k % 15 = 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_default_fp
-        |  FROM acct GROUP BY 1)
-        |SELECT ac.cohort, ac.n_accounts, ac.n_default_fp,
-        |  CAST(coalesce(pc.n_pairs, 0) AS BIGINT) AS n_pairs,
-        |  CAST(coalesce(pc.n_ring_pairs, 0) AS BIGINT) AS n_ring_pairs,
-        |  CAST(coalesce(pc.n_linking_fps, 0) AS BIGINT) AS n_linking_fps
-        |FROM ac LEFT JOIN pc ON pc.cohort = ac.cohort
-        |ORDER BY ac.cohort""".stripMargin,
-
-    "fn_isin_check" -> {
-      def md(i: Int) =
-        s"${duckMd5Bits("'is:' || CAST(k AS VARCHAR)", 1, i)} % 10"
-      val cc = (1 to 4).map(j =>
-        s"(CASE WHEN k % 3 = 0 THEN ${Seq(3, 0, 2, 8)(j - 1)} WHEN k % 3 = 1 THEN ${Seq(1, 6, 1, 1)(j - 1)} ELSE ${Seq(1, 3, 1, 4)(j - 1)} END)")
-      val letter =
-        s"(10 + ${duckMd5Bits("il", "k", 4)} % 26)"
-      val ds: Seq[String] = cc ++ Seq(s"($letter // 10)", s"($letter % 10)") ++
-        (1 to 8).map(i => s"(${md(i)})")
-      def luhn2(e: String) = s"(CASE WHEN 2 * $e > 9 THEN 2 * $e - 9 ELSE 2 * $e END)"
-      val sum14 = ds.zipWithIndex.map { case (e, idx) =>
-        if ((idx + 1) % 2 == 0) luhn2(e) else e
-      }.mkString(" + ")
-      val dorig = ds.zipWithIndex.map { case (e, idx) =>
-        s"WHEN cpos = ${idx + 1} THEN $e"
-      }.mkString("CASE ", " ", " END")
-      s"""WITH t AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
-         |a AS (
-         |  SELECT k, ($sum14) AS s14, k % 8 = 5 AS corrupt,
-         |    ${duckMd5Bits("ip", "k", 4)} % 14 + 1 AS cpos,
-         |    ${duckMd5Bits("ic", "k", 4)} % 9 + 1 AS cdelta
-         |  FROM t),
-         |b AS (SELECT *, (10 - s14 % 10) % 10 AS chk, ($dorig) AS dorig FROM a),
-         |c AS (SELECT *, (dorig + cdelta) % 10 AS dnew FROM b),
-         |v AS (
-         |  SELECT k, corrupt,
-         |    s14 + chk + CASE WHEN corrupt THEN
-         |      (CASE WHEN cpos % 2 = 0 THEN ${luhn2("dnew")} ELSE dnew END)
-         |      - (CASE WHEN cpos % 2 = 0 THEN ${luhn2("dorig")} ELSE dorig END)
-         |    ELSE 0 END AS s_final
-         |  FROM c)
-         |SELECT CAST(k % 3 AS INT) AS country,
-         |  CAST(COUNT(*) AS BIGINT) AS n_isins,
-         |  CAST(SUM(CASE WHEN s_final % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-         |  CAST(SUM(CASE WHEN s_final % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_invalid,
-         |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupted
-         |FROM v GROUP BY 1 ORDER BY country""".stripMargin
-    },
-
-    "join_wash_trades" ->
-      s"""WITH trades AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
-        |    o_orderkey % 500 AS acct,
-        |    o_orderkey % 11 = 6 AS wash_plant,
-        |    o_orderkey % 7 = 3 AS itf,
-        |    CASE WHEN o_orderkey % 11 = 6
-        |      THEN (o_orderkey % 500) - (o_orderkey % 500) % 5
-        |        + ${duckMd5Bits("wc", "o_orderkey", 6)} % 5
-        |      ELSE ${duckMd5Bits("wo", "o_orderkey", 6)} % 500
-        |    END AS counter
-        |  FROM orders),
-        |owners AS (
-        |  SELECT DISTINCT CAST(o_orderkey % 500 AS BIGINT) AS acct,
-        |    (o_orderkey % 500) // 5 AS owner
-        |  FROM orders),
-        |j AS (
-        |  SELECT t.*,
-        |    oa.owner = ob.owner AND t.acct <> t.counter AND NOT t.itf AS wash
-        |  FROM trades t
-        |  JOIN owners oa ON oa.acct = t.acct
-        |  JOIN owners ob ON ob.acct = t.counter)
-        |SELECT CAST(k % 4 AS INT) AS symbol,
-        |  CAST(COUNT(*) AS BIGINT) AS n_trades,
-        |  CAST(SUM(CASE WHEN wash THEN 1 ELSE 0 END) AS BIGINT) AS n_wash,
-        |  CAST(SUM(CASE WHEN wash_plant AND NOT itf AND acct <> counter
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_planted_live,
-        |  CAST(SUM(CASE WHEN wash THEN cents ELSE 0 END) AS BIGINT) AS wash_cents
-        |FROM j GROUP BY 1 ORDER BY symbol""".stripMargin,
-
-    "llm_agent_loop_detect" ->
-      s"""WITH steps AS (
-        |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |    CAST(o_orderkey % 3 AS INT) AS cls, g.i,
-        |    ${duckMd5Bits("'tc:' || CAST(o_orderkey AS VARCHAR) || ':' || CAST(g.i AS VARCHAR)", 6)} % 10
-        |      >= 7 - 2 * (o_orderkey % 3) AS fail
-        |  FROM orders, generate_series(0, 15) AS g(i)),
-        |f AS (
-        |  SELECT k, cls, i,
-        |    SUM(CASE WHEN fail THEN 1 ELSE 0 END) OVER (
-        |      PARTITION BY k ORDER BY i
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS failseq
-        |  FROM steps WHERE fail),
-        |r AS (
-        |  SELECT k, cls, MAX(run_len) AS max_run, SUM(run_len) AS n_fails
-        |  FROM (
-        |    SELECT k, cls, i - failseq AS grp, CAST(COUNT(*) AS BIGINT) AS run_len
-        |    FROM f GROUP BY k, cls, i - failseq) q
-        |  GROUP BY 1, 2),
-        |per AS (
-        |  SELECT t.k, t.cls,
-        |    coalesce(r.max_run, 0) AS max_run, coalesce(r.n_fails, 0) AS n_fails
-        |  FROM (SELECT CAST(o_orderkey AS BIGINT) AS k,
-        |      CAST(o_orderkey % 3 AS INT) AS cls FROM orders) t
-        |  LEFT JOIN r ON r.k = t.k),
-        |g2 AS (
-        |  SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_traces,
-        |    CAST(SUM(CASE WHEN max_run >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_stuck,
-        |    CAST(SUM(n_fails) AS BIGINT) AS fail_mass,
-        |    CAST(SUM(max_run) AS BIGINT) AS retry_depth_mass
-        |  FROM per GROUP BY 1)
-        |SELECT cls, n_traces, n_stuck, fail_mass, retry_depth_mass,
-        |  (n_stuck * 1000000) // n_traces AS stuck_ppm
-        |FROM g2 ORDER BY cls""".stripMargin,
-
-    "source_varint_delimited" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    CAST(strlen(CAST(doc_id AS VARCHAR) || '|' || lang || '|' || text) AS BIGINT) AS len
-        |  FROM documents WHERE doc_id % 7 = 5)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_records,
-        |  CAST(SUM(len) AS BIGINT) AS payload_byte_mass,
-        |  CAST(SUM(CASE WHEN len < 128 THEN 1 WHEN len < 16384 THEN 2 ELSE 3 END) AS BIGINT) AS varint_overhead_bytes,
-        |  CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-        |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
-        |FROM t GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "service_hedge_delay_sweep" -> {
-      def lat(salt: String) =
-        s"""${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % 100 + 50
-           | + (CASE WHEN ${duckMd5Bits(s"'${salt}t' || CAST(k AS VARCHAR)", 6)} % 20 = 0
-           |    THEN 900 ELSE 0 END)""".stripMargin
-      s"""WITH t AS (
-         |  SELECT k, l1, l2, CAST(v.delay AS BIGINT) AS delay,
-         |    LEAST(l1, l2 + v.delay) AS hedged, l1 > v.delay AS fired
-         |  FROM (
-         |    SELECT CAST(o_orderkey AS BIGINT) AS k,
-         |      ${lat("hl:")} AS l1,
-         |      ${lat("hm:")} AS l2
-         |    FROM orders) q
-         |  CROSS JOIN (VALUES (75), (150), (300)) AS v(delay))
-         |SELECT delay,
-         |  CAST(COUNT(*) AS BIGINT) AS n_requests,
-         |  CAST(SUM(CASE WHEN l1 > 500 THEN 1 ELSE 0 END) AS BIGINT) AS tail_primary,
-         |  CAST(SUM(CASE WHEN hedged > 500 THEN 1 ELSE 0 END) AS BIGINT) AS tail_hedged,
-         |  CAST(SUM(l1) AS BIGINT) AS primary_latency_mass,
-         |  CAST(SUM(hedged) AS BIGINT) AS hedged_latency_mass,
-         |  CAST(SUM(CASE WHEN fired THEN 1 ELSE 0 END) AS BIGINT) AS extra_load
-         |FROM t GROUP BY 1 ORDER BY delay""".stripMargin
-    },
-
-    "join_score_fusion" -> {
-      def score(salt: String, gBase: Int, gW: Int, iW: Int) =
-        s"""CASE WHEN k % 4 = 0
-           | THEN $gBase + ${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $gW
-           | ELSE ${duckMd5Bits(s"'$salt' || CAST(k AS VARCHAR)", 6)} % $iW END""".stripMargin
-      s"""WITH t AS (
-         |  SELECT k, k % 4 = 0 AS genuine, face, voice, doc,
-         |    (3 * face + 2 * voice + doc) // 6 AS fused
-         |  FROM (
-         |    SELECT CAST(c_custkey AS BIGINT) AS k,
-         |      ${score("bf:", 600, 400, 700)} AS face,
-         |      ${score("bv:", 550, 450, 750)} AS voice,
-         |      ${score("bd:", 500, 500, 600)} AS doc
-         |    FROM customer) q),
-         |x AS (SELECT t.*, CAST(v.tau AS BIGINT) AS tau
-         |  FROM t CROSS JOIN (VALUES (400), (500), (550), (600), (650)) AS v(tau)),
-         |g AS (
-         |  SELECT tau,
-         |    CAST(SUM(CASE WHEN NOT genuine THEN 1 ELSE 0 END) AS BIGINT) AS n_imposters,
-         |    CAST(SUM(CASE WHEN genuine THEN 1 ELSE 0 END) AS BIGINT) AS n_genuine,
-         |    CAST(SUM(CASE WHEN NOT genuine AND fused >= tau THEN 1 ELSE 0 END) AS BIGINT) AS fused_fa,
-         |    CAST(SUM(CASE WHEN genuine AND fused < tau THEN 1 ELSE 0 END) AS BIGINT) AS fused_fr,
-         |    CAST(SUM(CASE WHEN NOT genuine AND face >= tau THEN 1 ELSE 0 END) AS BIGINT) AS face_fa,
-         |    CAST(SUM(CASE WHEN genuine AND face < tau THEN 1 ELSE 0 END) AS BIGINT) AS face_fr
-         |  FROM x GROUP BY 1)
-         |SELECT tau, n_imposters, n_genuine, fused_fa, fused_fr, face_fa, face_fr,
-         |  (fused_fa * 1000000) // n_imposters AS fused_far_ppm,
-         |  (fused_fr * 1000000) // n_genuine AS fused_frr_ppm,
-         |  (face_fa * 1000000) // n_imposters AS face_far_ppm,
-         |  (face_fr * 1000000) // n_genuine AS face_frr_ppm
-         |FROM g ORDER BY tau""".stripMargin
-    },
-
-    "graph_louvain_levels" -> {
-      s"""WITH ${GraphOps.louvainOracleCtes},
-         |g1 AS (SELECT a, b, w FROM hw),
-         |${louvLevelSql(1, "g1")},
-         |${louvLevelSql(2, "g2")},
-         |${louvLevelSql(3, "g3")}
-         |SELECT * FROM (
-         |  SELECT cen1.*, intx1.internal_w_mass FROM cen1, intx1
-         |  UNION ALL SELECT cen2.*, intx2.internal_w_mass FROM cen2, intx2
-         |  UNION ALL SELECT cen3.*, intx3.internal_w_mass FROM cen3, intx3) q
-         |ORDER BY level""".stripMargin
-    },
-
-    "graph_max_flow" ->
-      s"""WITH base AS (SELECT CAST(c_custkey AS BIGINT) AS k FROM customer),
-        |sup AS (
-        |  SELECT k, s, CAST(SUM(s) OVER (ORDER BY k) AS BIGINT) AS se,
-        |    CAST(SUM(s) OVER (ORDER BY k) - s AS BIGINT) AS ss
-        |  FROM (SELECT k,
-        |      ${duckMd5Bits("mfs", "k", 6)} % 200 + 500 AS s
-        |    FROM base) q),
-        |dem AS (
-        |  SELECT k, dc, CAST(SUM(dc) OVER (ORDER BY k) AS BIGINT) AS de,
-        |    CAST(SUM(dc) OVER (ORDER BY k) - dc AS BIGINT) AS ds
-        |  FROM (SELECT k,
-        |      ${duckMd5Bits("mfd", "k", 6)} % 200 + 100 AS dc
-        |    FROM base) q),
-        |arcs AS (
-        |  SELECT sup.k AS sk, dem.k AS dk, sup.s, dem.dc,
-        |    CAST(LEAST(sup.se, dem.de) - GREATEST(sup.ss, dem.ds) AS BIGINT) AS flow
-        |  FROM sup JOIN dem ON sup.ss < dem.de AND dem.ds < sup.se),
-        |tot AS (SELECT CAST(SUM(flow) AS BIGINT) AS total_flow,
-        |    CAST(COUNT(*) AS BIGINT) AS n_arcs,
-        |    CAST(MAX(flow) AS BIGINT) AS max_arc_flow FROM arcs),
-        |cut AS (SELECT CAST(SUM(dc) AS BIGINT) AS min_cut_mass FROM dem),
-        |ps AS (SELECT sk, MAX(s) AS s, CAST(SUM(flow) AS BIGINT) AS outf
-        |  FROM arcs GROUP BY 1),
-        |scl AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN coalesce(outf, 0) = sup.s THEN 1 ELSE 0 END) AS BIGINT) AS n_supplies_full,
-        |    CAST(SUM(CASE WHEN coalesce(outf, 0) > 0 AND coalesce(outf, 0) < sup.s THEN 1 ELSE 0 END) AS BIGINT) AS n_supplies_partial,
-        |    CAST(SUM(CASE WHEN coalesce(outf, 0) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_supplies_idle,
-        |    CAST(SUM(sup.s - coalesce(outf, 0)) AS BIGINT) AS supply_slack_mass
-        |  FROM sup LEFT JOIN ps ON ps.sk = sup.k),
-        |pd AS (SELECT dk, MAX(dc) AS dc, CAST(SUM(flow) AS BIGINT) AS inn
-        |  FROM arcs GROUP BY 1),
-        |dcl AS (
-        |  SELECT CAST(SUM(CASE WHEN inn = dc THEN 1 ELSE 0 END) AS BIGINT) AS n_demands_saturated,
-        |    CAST(COUNT(*) AS BIGINT) AS n_demands_touched
-        |  FROM pd)
-        |SELECT tot.total_flow, cut.min_cut_mass, tot.n_arcs, tot.max_arc_flow,
-        |  dcl.n_demands_saturated, dcl.n_demands_touched, scl.n_supplies_full,
-        |  scl.n_supplies_partial, scl.n_supplies_idle, scl.supply_slack_mass
-        |FROM tot, cut, scl, dcl""".stripMargin,
-
-    "join_geo_cell" ->
-      s"""WITH pts AS (
-        |  SELECT k, gc,
-        |    (gc % 4) * 262144 + 131072 + ox % 6001 - 3000 AS x,
-        |    (gc // 4) * 262144 + 131072 + oy % 6001 - 3000 AS y
-        |  FROM (
-        |    SELECT CAST(p_partkey AS BIGINT) AS k,
-        |      ${duckMd5Bits("gc", "p_partkey", 6)} % 16 AS gc,
-        |      ${duckMd5Bits("gox", "p_partkey", 6)} AS ox,
-        |      ${duckMd5Bits("goy", "p_partkey", 6)} AS oy
-        |    FROM part) q),
-        |cc AS (
-        |  SELECT k, x, y,
-        |    (x // 65536) * 16 + (y // 65536) AS c4,
-        |    (x // 16384) * 64 + (y // 16384) AS c6,
-        |    (x // 4096) * 256 + (y // 4096) AS c8
-        |  FROM pts),
-        |smp AS (
-        |  SELECT k, x, y, c8 FROM cc
-        |  ORDER BY md5('gs:' || CAST(k AS VARCHAR)), k LIMIT 300),
-        |tp AS (
-        |  SELECT a.k AS k1, b.k AS k2 FROM smp a JOIN smp b ON a.k < b.k
-        |  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 16000000),
-        |rc AS (
-        |  SELECT a.k AS k1, b.k AS k2, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2
-        |  FROM smp a JOIN smp b ON a.k < b.k
-        |  WHERE abs(a.c8 // 256 - b.c8 // 256) <= 1 AND abs(a.c8 % 256 - b.c8 % 256) <= 1),
-        |fp AS (
-        |  SELECT k1, k2 FROM rc
-        |  WHERE (x1 - x2) * (x1 - x2) + (y1 - y2) * (y1 - y2) <= 16000000)
-        |SELECT * FROM (
-        |  SELECT 'cells_r4' AS metric, CAST(COUNT(DISTINCT c4) AS BIGINT) AS value FROM cc
-        |  UNION ALL SELECT 'cells_r6', CAST(COUNT(DISTINCT c6) AS BIGINT) FROM cc
-        |  UNION ALL SELECT 'cells_r8', CAST(COUNT(DISTINCT c8) AS BIGINT) FROM cc
-        |  UNION ALL SELECT 'max_pop_r8', CAST(MAX(p) AS BIGINT) FROM (
-        |    SELECT COUNT(*) AS p FROM cc GROUP BY c8) q
-        |  UNION ALL SELECT 'containment_viol_4_6', CAST(SUM(CASE WHEN
-        |      ((c6 // 64) // 4) * 16 + ((c6 % 64) // 4) <> c4 THEN 1 ELSE 0 END) AS BIGINT) FROM cc
-        |  UNION ALL SELECT 'containment_viol_6_8', CAST(SUM(CASE WHEN
-        |      ((c8 // 256) // 4) * 64 + ((c8 % 256) // 4) <> c6 THEN 1 ELSE 0 END) AS BIGINT) FROM cc
-        |  UNION ALL SELECT 'ring_candidate_pairs', CAST(COUNT(*) AS BIGINT) FROM rc
-        |  UNION ALL SELECT 'true_pairs', CAST(COUNT(*) AS BIGINT) FROM tp
-        |  UNION ALL SELECT 'found_pairs', CAST(COUNT(*) AS BIGINT) FROM fp
-        |  UNION ALL SELECT 'recall_ppm',
-        |    CAST(((SELECT COUNT(*) FROM fp f JOIN tp t ON t.k1 = f.k1 AND t.k2 = f.k2)
-        |      * 1000000) // NULLIF((SELECT COUNT(*) FROM tp), 0) AS BIGINT)) q
-        |ORDER BY metric""".stripMargin,
-
-    "agg_safety_stock" -> {
-      val isq = Round12cOps.duckIsqrt("var_floor * lt")
-      s"""WITH obs AS (
-         |  SELECT p, cls, i,
-         |    ${duckMd5Bits("'sd:' || CAST(p AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 6)}
-         |      % (20 * (cls + 1)) + 100 AS x
-         |  FROM (SELECT CAST(p_partkey AS BIGINT) AS p,
-         |      CAST(p_partkey % 5 AS INT) AS cls FROM part) q,
-         |    generate_series(0, 23) AS t(i)),
-         |per AS (
-         |  SELECT p, cls, p % 3 + 1 AS lt,
-         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(x * x) AS BIGINT) AS qx
-         |  FROM obs GROUP BY 1, 2),
-         |v AS (SELECT p, cls, lt, sx,
-         |    (24 * qx - sx * sx) // (24 * 24) AS var_floor FROM per),
-         |ss AS (SELECT p, cls,
-         |    (196 * $isq) // 100 AS ss, lt, sx FROM v),
-         |r AS (SELECT cls, ss, (sx // 24) * lt + ss AS rop FROM ss)
-         |SELECT cls, CAST(COUNT(*) AS BIGINT) AS n_parts,
-         |  CAST(SUM(ss) AS BIGINT) AS ss_mass,
-         |  CAST(SUM(rop) AS BIGINT) AS rop_mass,
-         |  CAST(MAX(ss) AS BIGINT) AS max_ss
-         |FROM r GROUP BY 1 ORDER BY cls""".stripMargin
-    },
-
-    "source_webdataset_index" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(doc_id % 2 AS INT) AS shard,
-        |    CAST(strlen(text) AS BIGINT) AS size
-        |  FROM documents WHERE doc_id % 9 = 4),
-        |o AS (
-        |  SELECT shard, doc_id, size,
-        |    CAST(coalesce(SUM(512 + ((size + 511) // 512) * 512) OVER (
-        |      PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-        |  FROM t)
-        |SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_members,
-        |  CAST(COUNT(*) AS BIGINT) AS n_offset_match,
-        |  CAST(COUNT(*) AS BIGINT) AS n_size_match,
-        |  CAST(SUM(size) AS BIGINT) AS payload_byte_mass,
-        |  CAST(MAX(off) AS BIGINT) AS max_offset
-        |FROM o GROUP BY 1 ORDER BY shard""".stripMargin,
-
-    "source_tfrecord" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, text FROM documents WHERE doc_id % 6 = 2)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_records,
-        |  CAST(SUM(strlen(CAST(doc_id AS VARCHAR) || '|' || lang || '|' || text)) AS BIGINT) AS payload_byte_mass,
-        |  CAST(COUNT(*) AS BIGINT) AS n_crc_ok,
-        |  CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-        |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
-        |FROM t GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "llm_ann_index_delete" ->
-      s"""WITH pos AS (SELECT CAST(i AS BIGINT) AS pos FROM generate_series(0, 63) AS t(i)),
-        |raw AS (
-        |  SELECT e.vec_id, p.pos,
-        |    CAST(FLOOR(CAST(e.embedding[p.pos + 1] AS DOUBLE) * 10000) AS BIGINT) AS xm
-        |  FROM embeddings e, pos p
-        |  WHERE p.pos + 1 <= len(e.embedding)),
-        |szs AS (SELECT COUNT(DISTINCT vec_id) AS t,
-        |    COUNT(DISTINCT CASE WHEN vec_id % 7 = 3 THEN vec_id END) AS del
-        |  FROM raw),
-        |md AS (SELECT GREATEST(1, CAST(FLOOR(SQRT(CAST(t AS DOUBLE))) AS BIGINT)) AS m FROM szs),
-        |cent AS (
-        |  SELECT r.vec_id AS cid, r.pos, r.xm AS cm FROM raw r, md
-        |  WHERE ${duckMd5Bits("CAST(r.vec_id AS VARCHAR)", 8)} % md.m = 0),
-        |asg AS (
-        |  SELECT vec_id, cid AS cluster FROM (
-        |    SELECT r.vec_id, c.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY r.vec_id ORDER BY SUM(r.xm * c.cm) DESC, c.cid) AS rn
-        |    FROM raw r JOIN cent c ON r.pos = c.pos
-        |    GROUP BY r.vec_id, c.cid) q
-        |  WHERE rn = 1),
-        |probe_ids AS (
-        |  SELECT vec_id FROM (SELECT DISTINCT vec_id FROM raw WHERE vec_id % 7 <> 3) q
-        |  ORDER BY md5('dprobe:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 200),
-        |probes AS (
-        |  SELECT r.vec_id AS probe_id, r.pos, r.xm AS pm
-        |  FROM raw r JOIN probe_ids pi ON r.vec_id = pi.vec_id),
-        |truth AS (
-        |  SELECT probe_id, vec_id FROM (
-        |    SELECT probe_id, vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY qdot DESC, vec_id) AS rk
-        |    FROM (
-        |      SELECT p.probe_id, r.vec_id, SUM(p.pm * r.xm) AS qdot
-        |      FROM probes p JOIN raw r ON p.pos = r.pos
-        |      WHERE r.vec_id <> p.probe_id AND r.vec_id % 7 <> 3
-        |      GROUP BY 1, 2) q1) q2
-        |  WHERE rk <= 3),
-        |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth),
-        |cells AS (
-        |  SELECT probe_id, cid AS cluster FROM (
-        |    SELECT p.probe_id, c.cid,
-        |      ROW_NUMBER() OVER (PARTITION BY p.probe_id ORDER BY SUM(p.pm * c.cm) DESC, c.cid) AS rn
-        |    FROM probes p JOIN cent c ON p.pos = c.pos
-        |    GROUP BY p.probe_id, c.cid) q
-        |  WHERE rn <= 4),
-        |cand AS (
-        |  SELECT DISTINCT ce.probe_id, a.vec_id
-        |  FROM cells ce JOIN asg a ON a.cluster = ce.cluster
-        |  WHERE a.vec_id <> ce.probe_id),
-        |scored AS (
-        |  SELECT c.probe_id, c.vec_id, SUM(p.pm * r.xm) AS qdot
-        |  FROM cand c JOIN probes p ON p.probe_id = c.probe_id
-        |  JOIN raw r ON r.vec_id = c.vec_id AND r.pos = p.pos
-        |  GROUP BY 1, 2),
-        |ret_u AS (
-        |  SELECT probe_id, vec_id FROM (
-        |    SELECT probe_id, vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY qdot DESC, vec_id) AS rk
-        |    FROM scored) q WHERE rk <= 3),
-        |ret_m AS (
-        |  SELECT probe_id, vec_id FROM (
-        |    SELECT probe_id, vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY qdot DESC, vec_id) AS rk
-        |    FROM scored WHERE vec_id % 7 <> 3) q WHERE rk <= 3),
-        |gu AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_returned,
-        |    CAST(SUM(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_returned_deleted,
-        |    CAST(SUM(CASE WHEN EXISTS (SELECT 1 FROM truth t
-        |      WHERE t.probe_id = ret_u.probe_id AND t.vec_id = ret_u.vec_id)
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        |  FROM ret_u),
-        |gm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_returned,
-        |    CAST(SUM(CASE WHEN vec_id % 7 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_returned_deleted,
-        |    CAST(SUM(CASE WHEN EXISTS (SELECT 1 FROM truth t
-        |      WHERE t.probe_id = ret_m.probe_id AND t.vec_id = ret_m.vec_id)
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS hits
-        |  FROM ret_m)
-        |SELECT * FROM (
-        |  SELECT 'unmasked' AS phase, CAST(szs.t AS BIGINT) AS n_index_rows,
-        |    CAST(szs.del AS BIGINT) AS n_tombstones, gu.n_returned,
-        |    gu.n_returned_deleted, nt.n_truth, gu.hits,
-        |    (gu.hits * 1000000) // nt.n_truth AS recall_ppm
-        |  FROM gu, nt, szs
-        |  UNION ALL
-        |  SELECT 'masked', CAST(szs.t AS BIGINT), CAST(szs.del AS BIGINT),
-        |    gm.n_returned, gm.n_returned_deleted, nt.n_truth, gm.hits,
-        |    (gm.hits * 1000000) // nt.n_truth
-        |  FROM gm, nt, szs
-        |  UNION ALL
-        |  SELECT 'compacted', CAST(szs.t - szs.del AS BIGINT), CAST(0 AS BIGINT),
-        |    gm.n_returned, gm.n_returned_deleted, nt.n_truth, gm.hits,
-        |    (gm.hits * 1000000) // nt.n_truth
-        |  FROM gm, nt, szs) q
-        |ORDER BY phase""".stripMargin,
-
-    "agg_wilson_ci" -> {
-      val srt = Round12cOps.duckIsqrt("(10000 * clicks * (views - clicks)) // views + 9604")
-      s"""WITH t AS (
-         |  SELECT CAST(p_partkey % 3 AS INT) AS cohort, p_partkey AS k,
-         |    ${duckMd5Bits("wv", "p_partkey", 6)} % 100 AS views
-         |  FROM part),
-         |c AS (
-         |  SELECT cohort, views,
-         |    ${duckMd5Bits("wc", "k", 6)} % (views + 1) AS clicks
-         |  FROM t WHERE views > 0),
-         |w AS (
-         |  SELECT cohort, views, clicks,
-         |    (clicks * 1000000) // views AS raw_ppm,
-         |    $srt AS srt
-         |  FROM c),
-         |b AS (
-         |  SELECT cohort, raw_ppm,
-         |    ((10000 * clicks + 19208 - 196 * srt) * 1000000) // (10000 * views + 38416) AS lower_ppm,
-         |    ((10000 * clicks + 19208 + 196 * srt) * 1000000) // (10000 * views + 38416) AS upper_ppm
-         |  FROM w)
-         |SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_items,
-         |  CAST(SUM(lower_ppm) AS BIGINT) AS lower_mass_ppm,
-         |  CAST(SUM(upper_ppm) AS BIGINT) AS upper_mass_ppm,
-         |  CAST(SUM(CASE WHEN lower_ppm <= raw_ppm AND raw_ppm <= upper_ppm
-         |    THEN 1 ELSE 0 END) AS BIGINT) AS n_coverage_ok,
-         |  CAST(SUM(CASE WHEN lower_ppm > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_lower_pos
-         |FROM b GROUP BY 1 ORDER BY cohort""".stripMargin
-    },
-
-    "agg_james_stein" ->
-      s"""WITH base AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS k,
-        |    CAST(c_custkey % 3 AS INT) AS cohort,
-        |    5000 + (c_custkey % 3) * 200 AS theta,
-        |    5000 + (c_custkey % 3) * 200
-        |      + ${duckMd5Bits("js", "c_custkey", 6)} % 199 - 99 AS x
-        |  FROM customer),
-        |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS kc,
-        |    (CAST(SUM(x) AS BIGINT) * 1000) // COUNT(*) AS xbar_milli
-        |  FROM base),
-        |dev AS (SELECT b.*, g.kc, g.xbar_milli,
-        |    b.x * 1000 - g.xbar_milli AS dev_milli
-        |  FROM base b, g),
-        |sh AS (SELECT CAST(1000000 - LEAST(CAST(1000000 AS HUGEINT),
-        |      (CAST(MAX(kc) - 3 AS HUGEINT) * 3300 * 1000000000000)
-        |        // CAST(SUM(dev_milli * dev_milli) AS HUGEINT)) AS BIGINT)
-        |    AS b_shrink_ppm
-        |  FROM dev),
-        |sc AS (
-        |  SELECT d.cohort,
-        |    (d.x - d.theta) * 1000 AS raw_err,
-        |    d.xbar_milli - 10 * sh.b_shrink_ppm
-        |      + (sh.b_shrink_ppm * (d.dev_milli + 10000000)) // 1000000
-        |      - d.theta * 1000 AS js_err,
-        |    sh.b_shrink_ppm
-        |  FROM dev d, sh)
-        |SELECT * FROM (
-        |  SELECT cohort, CAST(COUNT(*) AS BIGINT) AS n_items,
-        |    CAST(MAX(b_shrink_ppm) AS BIGINT) AS b_shrink_ppm,
-        |    CAST(SUM(raw_err * raw_err) AS BIGINT) AS raw_sse,
-        |    CAST(SUM(js_err * js_err) AS BIGINT) AS js_sse
-        |  FROM sc GROUP BY 1
-        |  UNION ALL
-        |  SELECT CAST(-1 AS INT), CAST(COUNT(*) AS BIGINT),
-        |    CAST(MAX(b_shrink_ppm) AS BIGINT),
-        |    CAST(SUM(raw_err * raw_err) AS BIGINT),
-        |    CAST(SUM(js_err * js_err) AS BIGINT)
-        |  FROM sc) q
-        |ORDER BY cohort""".stripMargin
-  )
 
   /** TFRecord framing (public format): [uint64 LE length][uint32 LE masked
     * CRC32C of the 8 length bytes][payload][uint32 LE masked CRC32C of the

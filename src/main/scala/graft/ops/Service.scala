@@ -254,7 +254,7 @@ object Service extends Family {
     } finally { cxShutdown(c1); cxShutdown(c2) }
   }
 
-  val queries: Map[String, Q] = unique(
+  val ops: Seq[Op] = Seq(
     // The canonical Hive wire, graded as a full endpoint LIFECYCLE (the
     // round-12 verdict's brief item 4) — everything a BI tool or beeline
     // session exercises that `service_sql_endpoint`'s single rollup does
@@ -270,7 +270,7 @@ object Service extends Family {
     // port verified closed, and the verdict graded. Money in exact cents
     // (BIGINT) end to end; oracle = the same rollup over the source
     // parquet plus TRUE attest columns — the wire must be invisible.
-    "service_thrift_endpoint" -> ((s, d) => {
+    Op("service_thrift_endpoint", (s, d) => {
       val port = ensureServer(s)
       Tables.orders(s, d)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -329,9 +329,24 @@ object Service extends Family {
       s.createDataFrame(new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava), schema)
         .orderBy("o_orderstatus")
-    }),
+    },
+      // Wire invisibility again, now for the lifecycle op: the rollup over
+      // the source parquet, n_paged = the LIMIT'd cardinality of the first
+      // status (paging is lossless), attest columns TRUE (the op fails
+      // loudly before emitting rows otherwise).
+      """WITH base AS (SELECT o_orderstatus,
+        |    CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS c
+        |  FROM orders),
+        |first_st AS (SELECT MIN(o_orderstatus) AS st FROM base),
+        |paged AS (SELECT LEAST(CAST(500 AS BIGINT), COUNT(*)) AS n_paged
+        |  FROM base, first_st WHERE o_orderstatus = st)
+        |SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
+        |  CAST(SUM(c) AS BIGINT) AS cents,
+        |  (SELECT n_paged FROM paged) AS n_paged,
+        |  TRUE AS discovered, TRUE AS server_stopped
+        |FROM base GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "service_connect_endpoint" -> ((s, d) => {
+    Op("service_connect_endpoint", (s, d) => {
       val port = ensureConnectServer(s)
       val isolated = connectIsolationProbe(port)
       // the graded rollup runs THROUGH the gRPC wire over the source
@@ -367,9 +382,15 @@ object Service extends Family {
       s.createDataFrame(new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
         .orderBy("o_orderstatus")
-    }),
+    },
+      // Same invisibility contract for the Connect wire: Arrow IPC decode
+      // must hand back exactly the rollup over the source parquet.
+      """SELECT o_orderstatus, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
+        |  TRUE AS session_isolated
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
-    "service_sql_endpoint" -> ((s, d) => {
+    Op("service_sql_endpoint", (s, d) => {
       // server first (its port conf must be in the session conf before
       // the execution Hive client materializes), then publish the served
       // table into the Derby metastore (idempotent overwrite; external
@@ -404,42 +425,13 @@ object Service extends Family {
       s.createDataFrame(new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
         .orderBy("o_orderstatus")
-    })
-  )
-
-  val oracles: Map[String, String] = unique(
-    // Wire invisibility again, now for the lifecycle op: the rollup over
-    // the source parquet, n_paged = the LIMIT'd cardinality of the first
-    // status (paging is lossless), attest columns TRUE (the op fails
-    // loudly before emitting rows otherwise).
-    "service_thrift_endpoint" ->
-      """WITH base AS (SELECT o_orderstatus,
-        |    CAST(CAST(o_totalprice AS DECIMAL(18,4)) * 100 AS BIGINT) AS c
-        |  FROM orders),
-        |first_st AS (SELECT MIN(o_orderstatus) AS st FROM base),
-        |paged AS (SELECT LEAST(CAST(500 AS BIGINT), COUNT(*)) AS n_paged
-        |  FROM base, first_st WHERE o_orderstatus = st)
-        |SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |  CAST(SUM(c) AS BIGINT) AS cents,
-        |  (SELECT n_paged FROM paged) AS n_paged,
-        |  TRUE AS discovered, TRUE AS server_stopped
-        |FROM base GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // The wire protocol must be invisible: the oracle is the rollup
-    // straight over the source parquet, isolation attested TRUE (the op
-    // fails loudly before emitting rows if the probe cannot prove it).
-    "service_sql_endpoint" ->
+    },
+      // The wire protocol must be invisible: the oracle is the rollup
+      // straight over the source parquet, isolation attested TRUE (the op
+      // fails loudly before emitting rows if the probe cannot prove it).
       """SELECT o_orderstatus, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  TRUE AS session_isolated
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // Same invisibility contract for the Connect wire: Arrow IPC decode
-    // must hand back exactly the rollup over the source parquet.
-    "service_connect_endpoint" ->
-      """SELECT o_orderstatus, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-        |  TRUE AS session_isolated
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
   )
 }

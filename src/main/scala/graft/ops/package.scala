@@ -61,24 +61,32 @@ package object ops {
 }
 
 package ops {
-  /** One operator family: its operators by name, and the DuckDB twin of
-    * each. `graft.SparkEntry.families` lists every family once. */
+  /** One operator: its name, how it builds its DataFrame from a session and
+    * an sf dir, and the DuckDB SQL over the same parquet tables that must
+    * return the same rows. */
+  final case class Op(name: String, build: Op.Build, oracle: String) {
+    require(name.trim.nonEmpty, "an operator needs a name")
+    require(oracle != null && oracle.trim.nonEmpty, s"operator $name needs an oracle")
+  }
+
+  object Op {
+    type Build = (SparkSession, String) => DataFrame
+  }
+
+  /** One operator family. `graft.SparkEntry.families` lists every family once. */
   trait Family {
-    type Q = (SparkSession, String) => DataFrame
-    def queries: Map[String, Q]
-    def oracles: Map[String, String]
-    protected def unique[V](entries: (String, V)*): Map[String, V] = Family.unique(entries: _*)
+    def ops: Seq[Op]
   }
 
   object Family {
-    /** `Map(entries: _*)`, except that a name given twice throws instead of
-      * keeping the last entry: the exception names every repeated name. */
-    def unique[V](entries: (String, V)*): Map[String, V] = {
-      val dups = entries.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    /** The ops by name, except that a name given twice throws instead of
+      * keeping the last op: the exception names every repeated name. */
+    def unique(ops: Seq[Op]): Map[String, Op] = {
+      val dups = ops.groupBy(_.name).collect { case (k, vs) if vs.size > 1 => k }
       if (dups.nonEmpty)
         throw new IllegalArgumentException(
           s"operator names given twice: ${dups.toSeq.sorted.mkString(", ")}")
-      entries.toMap
+      ops.map(o => o.name -> o).toMap
     }
   }
 }

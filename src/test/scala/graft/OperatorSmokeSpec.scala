@@ -37,36 +37,33 @@ class OperatorSmokeSpec extends AnyFunSuite with SparkFixture {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key exists in queries") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
-  }
-
-  test("every operator has an oracle (the HLL estimate is bound-graded since round 4)") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle.isEmpty, s"ops without oracle: $noOracle")
+  test("Op rejects a blank name or a blank oracle") {
+    import graft.ops.Op
+    val build: Op.Build = (s, _) => s.range(1).toDF()
+    for ((name, oracle) <- Seq(("", "SELECT 0 AS id"), (" ", "SELECT 0 AS id"),
+        ("op_x", ""), ("op_x", " \n "), ("op_x", null)))
+      intercept[IllegalArgumentException](Op(name, build, oracle))
+    assert(Op("op_x", build, "SELECT 0 AS id").name == "op_x")
   }
 
   test("Family.unique rejects a name given twice, inside one family or across two") {
-    import graft.ops.Family
+    import graft.ops.{Family, Op}
+    def op(name: String, n: Long) = Op(name, (s, _) => s.range(n).toDF(), "SELECT 0 AS id")
     val inOne = intercept[IllegalArgumentException] {
-      Family.unique("op_a" -> 1, "op_b" -> 2, "op_a" -> 3)
+      Family.unique(Seq(op("op_a", 1), op("op_b", 2), op("op_a", 3)))
     }
     assert(inOne.getMessage.contains("op_a") && !inOne.getMessage.contains("op_b"))
     object FamA extends Family {
-      val queries: Map[String, Q] = unique("op_x" -> ((s, _) => s.range(1).toDF()))
-      val oracles: Map[String, String] = unique("op_x" -> "SELECT 0 AS id")
+      val ops: Seq[Op] = Seq(op("op_x", 1))
     }
     object FamB extends Family {
-      val queries: Map[String, Q] = unique(
-        "op_y" -> ((s, _) => s.range(1).toDF()), "op_x" -> ((s, _) => s.range(2).toDF()))
-      val oracles: Map[String, String] = unique("op_y" -> "SELECT 0 AS id")
+      val ops: Seq[Op] = Seq(op("op_y", 1), op("op_x", 2))
     }
     val across = intercept[IllegalArgumentException] {
-      Family.unique(Seq(FamA, FamB).flatMap(_.queries): _*)
+      Family.unique(Seq(FamA, FamB).flatMap(_.ops))
     }
     assert(across.getMessage.contains("op_x") && !across.getMessage.contains("op_y"))
-    assert(Family.unique(Seq(FamA, FamB).flatMap(_.oracles): _*).keySet == Set("op_x", "op_y"))
+    assert(Family.unique(FamA.ops ++ FamB.ops.take(1)).keySet == Set("op_x", "op_y"))
   }
 
   test("scan_parquet preserves the 25 nations in key order") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave10Spec extends AnyFunSuite with SparkFixture {
 
   test("pipeline plan: bubble shrinks with m, efficiency is its complement") {
-    val rows = graft.ops.Round12bOps.queries("llm_pipeline_parallel_plan")(spark, sf)
+    val rows = SparkEntry.queries("llm_pipeline_parallel_plan")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(8)))
     assert(rows.length === 45)
     rows.foreach { case (_, _, _, bubble, eff) => assert(bubble + eff === 1000000L) }
@@ -19,7 +19,7 @@ class Round12Wave10Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("tensor plan: ring bytes approach 2× payload as t grows") {
-    val rows = graft.ops.Round12bOps.queries("llm_tensor_parallel_plan")(spark, sf)
+    val rows = SparkEntry.queries("llm_tensor_parallel_plan")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     rows.foreach { case (_, t, payload, ring) =>
       assert(ring === 2 * (t - 1) * payload / t)
@@ -33,7 +33,7 @@ class Round12Wave10Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("zero plan: stage memory is monotone non-increasing, stage3 = 16P/N") {
-    val rows = graft.ops.Round12bOps.queries("llm_zero_plan")(spark, sf)
+    val rows = SparkEntry.queries("llm_zero_plan")(spark, sf)
       .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2), r.getLong(3), r.getLong(4)))
     rows.groupBy(_._1).foreach { case ((_, n), g) =>
       val byStage = g.sortBy(_._2)
@@ -45,7 +45,7 @@ class Round12Wave10Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("lora plan: trainable share is tiny and scales linearly in r") {
-    val rows = graft.ops.Round12bOps.queries("llm_lora_plan")(spark, sf)
+    val rows = SparkEntry.queries("llm_lora_plan")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(4)))
     rows.foreach { case (_, _, ppm) => assert(ppm < 100000L) } // <10% always
     rows.groupBy(_._1).values.foreach { g =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave11Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_abc_xyz classes partition all parts; A-class carries most revenue") {
-    val rows = graft.ops.Round12bOps.queries("agg_abc_xyz")(spark, sf).collect()
+    val rows = SparkEntry.queries("agg_abc_xyz")(spark, sf).collect()
     val byAbc = rows.groupBy(_.getString(0)).view
       .mapValues(g => (g.map(_.getLong(2)).sum, g.map(_.getLong(3)).sum)).toMap
     assert(byAbc.keySet.subsetOf(Set("A", "B", "C")) && byAbc.contains("A"))
@@ -21,7 +21,7 @@ class Round12Wave11Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_newsvendor q* is the 3/4 fractile and ≥ the median") {
-    val rows = graft.ops.Round12bOps.queries("agg_newsvendor")(spark, sf).collect()
+    val rows = SparkEntry.queries("agg_newsvendor")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (qStar, qMed) = (r.getLong(2), r.getLong(3))
@@ -30,7 +30,7 @@ class Round12Wave11Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_littles_law: L = λ·W holds in the integer ledger") {
-    val rows = graft.ops.Round12bOps.queries("agg_littles_law")(spark, sf).collect()
+    val rows = SparkEntry.queries("agg_littles_law")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, sumDur, span, lMilli, wUs) =
@@ -43,7 +43,7 @@ class Round12Wave11Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_fiscal_445 periods lie in 1..12 and quarters hold 4-4-5 weeks") {
-    val rows = graft.ops.Round12bOps.queries("fn_fiscal_445")(spark, sf).collect()
+    val rows = SparkEntry.queries("fn_fiscal_445")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(1) >= 1 && r.getLong(1) <= 12)

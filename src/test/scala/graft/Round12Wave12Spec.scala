@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave12Spec extends AnyFunSuite with SparkFixture {
 
   test("graph_wiener_index satisfies the distance-summary bounds") {
-    val r = graft.ops.Round12bOps.queries("graph_wiener_index")(spark, sf).collect()(0)
+    val r = SparkEntry.queries("graph_wiener_index")(spark, sf).collect()(0)
     val (nNodes, nPairs, wiener, diam, eff, avgMilli) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
     assert(nPairs <= nNodes * (nNodes - 1) / 2)
@@ -19,7 +19,7 @@ class Round12Wave12Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_smr_standardization: crude confounds, SMR corrects") {
-    val rows = graft.ops.Round12bOps.queries("agg_smr_standardization")(spark, sf).collect()
+    val rows = SparkEntry.queries("agg_smr_standardization")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nStudy, obs, expMicro, smrMilli, dirMicro, crudeMicro) =
@@ -34,7 +34,7 @@ class Round12Wave12Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_force_index: fi sign matches the close move, fi13 sums the window") {
-    val rows = graft.ops.Round12bOps.queries("win_force_index")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_force_index")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (fi, fi13, pressure) = (r.getLong(4), r.getLong(5), r.getString(6))
@@ -45,7 +45,7 @@ class Round12Wave12Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_elder_ray: bull ≥ bear always (h ≥ l), signals consistent") {
-    val rows = graft.ops.Round12bOps.queries("win_elder_ray")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_elder_ray")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (h, l, bull, bear, sig) =

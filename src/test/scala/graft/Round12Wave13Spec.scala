@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave13Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_infinigram_next: every query resolves; backoff length in 1..3") {
-    val rows = graft.ops.Round12bOps.queries("llm_infinigram_next")(spark, sf).collect()
+    val rows = SparkEntry.queries("llm_infinigram_next")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (len, pred, cnt) = (r.getInt(2), r.getString(3), r.getLong(4))
@@ -21,7 +21,7 @@ class Round12Wave13Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("llm_prompt_compression: kept ≤ orig, ratio exact, preview short") {
-    val rows = graft.ops.Round12bOps.queries("llm_prompt_compression")(spark, sf).collect()
+    val rows = SparkEntry.queries("llm_prompt_compression")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (orig, kept, ppm, head) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
@@ -32,7 +32,7 @@ class Round12Wave13Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_roman_roundtrip: decode(encode(n)) = n for every sampled n") {
-    val rows = graft.ops.Round12bOps.queries("fn_roman_roundtrip")(spark, sf).collect()
+    val rows = SparkEntry.queries("fn_roman_roundtrip")(spark, sf).collect()
     assert(rows.length > 500)
     rows.foreach { r =>
       assert(r.getLong(2) === r.getLong(0), s"roman=${r.getString(1)}")
@@ -45,7 +45,7 @@ class Round12Wave13Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_mm1_queue: utilization < 1 here, and Lq follows rho²/(1−rho)") {
-    val rows = graft.ops.Round12bOps.queries("agg_mm1_queue")(spark, sf).collect()
+    val rows = SparkEntry.queries("agg_mm1_queue")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (busy, span, rho, lq) = (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))

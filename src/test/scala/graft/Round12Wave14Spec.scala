@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave14Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_aalen_johansen: S + CIF1 + CIF2 conserves 10^6 up to truncation") {
-    val rows = graft.ops.Round12bOps.queries("agg_aalen_johansen")(spark, SparkFixture.sf001).collect()
+    val rows = SparkEntry.queries("agg_aalen_johansen")(spark, SparkFixture.sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nTimes, s, c1, c2) = (r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8))
@@ -22,7 +22,7 @@ class Round12Wave14Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_life_table: lx chain is non-increasing from the radix") {
-    val rows = graft.ops.Round12bOps.queries("agg_life_table")(spark, SparkFixture.sf001).collect()
+    val rows = SparkEntry.queries("agg_life_table")(spark, SparkFixture.sf001).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, g) =>
       val byBand = g.sortBy(_.getLong(1))
@@ -41,7 +41,7 @@ class Round12Wave14Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_fractals: every emitted bar is a strict 5-bar extreme") {
-    val rows = graft.ops.Round12bOps.queries("win_fractals")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_fractals")(spark, sf).collect()
     assert(rows.nonEmpty)
     val kinds = rows.map(_.getString(4)).toSet
     assert(kinds.subsetOf(Set("UP", "DOWN", "BOTH")))

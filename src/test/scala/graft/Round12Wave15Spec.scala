@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave15Spec extends AnyFunSuite with SparkFixture {
 
   test("win_dmi_adx: DIs bounded, DX from the DI identity") {
-    val rows = graft.ops.Round12bOps.queries("win_dmi_adx")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_dmi_adx")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (pdi, ndi, dx, adx) = (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
@@ -19,7 +19,7 @@ class Round12Wave15Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_croston: forecast rate = z/p in ppm at the final state") {
-    val rows = graft.ops.Round12bOps.queries("agg_croston")(spark, SparkFixture.sf001).collect()
+    val rows = SparkEntry.queries("agg_croston")(spark, SparkFixture.sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, z, p, f) = (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
@@ -30,7 +30,7 @@ class Round12Wave15Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_user_agent_parse: classes match their templates") {
-    val rows = graft.ops.Round12bOps.queries("fn_user_agent_parse")(spark, sf).collect()
+    val rows = SparkEntry.queries("fn_user_agent_parse")(spark, sf).collect()
     val m = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(m.contains(("Chrome", "Windows")))
     assert(m.contains(("Safari", "macOS")))
@@ -44,7 +44,7 @@ class Round12Wave15Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_cron_next_fire resolves the hand-computed fire times") {
-    val m = graft.ops.Round12bOps.queries("fn_cron_next_fire")(spark, sf)
+    val m = SparkEntry.queries("fn_cron_next_fire")(spark, sf)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
     assert(m.size === 5)
     // base = 1995-06-01 00:00 (a Thursday)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave16Spec extends AnyFunSuite with SparkFixture {
 
   test("win_heikin_ashi: envelope + candle law, ho is the midpoint chain") {
-    val rows = graft.ops.Round12bOps.queries("win_heikin_ashi")(spark, sf)
+    val rows = SparkEntry.queries("win_heikin_ashi")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -32,7 +32,7 @@ class Round12Wave16Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_trix: e3 is smoother than c (lower total variation), ppm identity") {
-    val rows = graft.ops.Round12bOps.queries("win_trix")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_trix")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, g) =>
       val s = g.sortBy(_.getLong(1))
@@ -54,7 +54,7 @@ class Round12Wave16Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_hilbert_curve: exact roundtrip and unit-step locality") {
-    val rows = graft.ops.Round12bOps.queries("fn_hilbert_curve")(spark, sf)
+    val rows = SparkEntry.queries("fn_hilbert_curve")(spark, sf)
       .collect()
     assert(rows.length > 10)
     rows.foreach { r =>

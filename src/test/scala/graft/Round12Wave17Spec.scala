@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave17Spec extends AnyFunSuite with SparkFixture {
 
   test("win_chaikin_ad: osc identity and signal law") {
-    val rows = graft.ops.Round12cOps.queries("win_chaikin_ad")(spark, sf)
+    val rows = SparkEntry.queries("win_chaikin_ad")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -22,7 +22,7 @@ class Round12Wave17Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_snowflake_id: exact unpack roundtrip, id order == field order") {
-    val rows = graft.ops.Round12cOps.queries("fn_snowflake_id")(spark, sf)
+    val rows = SparkEntry.queries("fn_snowflake_id")(spark, sf)
       .collect()
     assert(rows.length > 100)
     rows.foreach { r =>
@@ -36,7 +36,7 @@ class Round12Wave17Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_ipf_raking: raked column margins hit the uniform target") {
-    val rows = graft.ops.Round12cOps.queries("agg_ipf_raking")(spark, sf)
+    val rows = SparkEntry.queries("agg_ipf_raking")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(2)).sum
@@ -53,7 +53,7 @@ class Round12Wave17Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_tax_brackets: effective rate is monotone in bracket, bounded") {
-    val rows = graft.ops.Round12cOps.queries("fn_tax_brackets")(spark, sf)
+    val rows = SparkEntry.queries("fn_tax_brackets")(spark, sf)
       .collect()
     assert(rows.map(_.getString(0)).toSet.subsetOf(
       Set("10pct", "20pct", "30pct", "40pct")))

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave18Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_base58_roundtrip: decode inverts encode, canonical alphabet") {
-    val rows = graft.ops.Round12cOps.queries("fn_base58_roundtrip")(spark, sf)
+    val rows = SparkEntry.queries("fn_base58_roundtrip")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val alpha = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
@@ -24,7 +24,7 @@ class Round12Wave18Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_wasserstein_1d: non-negative, bounded by n·m·range, identity-zero") {
-    val rows = graft.ops.Round12cOps.queries("agg_wasserstein_1d")(spark, sf)
+    val rows = SparkEntry.queries("agg_wasserstein_1d")(spark, sf)
       .collect()
     assert(rows.length === 5) // one per order priority
     rows.foreach { r =>
@@ -37,7 +37,7 @@ class Round12Wave18Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_rvi: ppm ratio bounded by ±1e6, crossover label law") {
-    val rows = graft.ops.Round12cOps.queries("win_rvi")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_rvi")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (rvi, sig) = (r.getLong(2), r.getLong(3))
@@ -50,7 +50,7 @@ class Round12Wave18Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_quadkey: roundtrip, digit alphabet, parent containment") {
-    val rows = graft.ops.Round12cOps.queries("fn_quadkey")(spark, sf).collect()
+    val rows = SparkEntry.queries("fn_quadkey")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(4) === r.getLong(1), "x roundtrip")

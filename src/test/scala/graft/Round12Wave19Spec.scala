@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave19Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_simpson_diversity: ppm bounds, dominance floor") {
-    val rows = graft.ops.Round12cOps.queries("agg_simpson_diversity")(
+    val rows = SparkEntry.queries("agg_simpson_diversity")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -24,7 +24,7 @@ class Round12Wave19Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_maidenhead: containment, alphabet shape, corner grid-aligned") {
-    val rows = graft.ops.Round12cOps.queries("fn_maidenhead")(spark, sf)
+    val rows = SparkEntry.queries("fn_maidenhead")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -40,7 +40,7 @@ class Round12Wave19Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_sax_paa: letters follow the mean ordering, segments sized 5") {
-    val rows = graft.ops.Round12cOps.queries("win_sax_paa")(spark, sf)
+    val rows = SparkEntry.queries("win_sax_paa")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, g) =>
@@ -56,7 +56,7 @@ class Round12Wave19Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_autocorr_lags: r0 would be 1e6; lag ratios bounded, den > 0") {
-    val rows = graft.ops.Round12cOps.queries("agg_autocorr_lags")(spark, sf)
+    val rows = SparkEntry.queries("agg_autocorr_lags")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

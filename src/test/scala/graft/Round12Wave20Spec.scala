@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave20Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_ean13_check: independent checksum replay, corruption always caught") {
-    val rows = graft.ops.Round12cOps.queries("fn_ean13_check")(spark, sf)
+    val rows = SparkEntry.queries("fn_ean13_check")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -24,7 +24,7 @@ class Round12Wave20Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_ultimate_osc: ppm in [0, 1e6], bp <= tr per horizon") {
-    val rows = graft.ops.Round12cOps.queries("win_ultimate_osc")(
+    val rows = SparkEntry.queries("win_ultimate_osc")(
       spark, SparkFixture.sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -37,7 +37,7 @@ class Round12Wave20Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_ordinal_patterns: labels legal/transitive, census complete") {
-    val rows = graft.ops.Round12cOps.queries("win_ordinal_patterns")(
+    val rows = SparkEntry.queries("win_ordinal_patterns")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     val legal = for {
@@ -53,7 +53,7 @@ class Round12Wave20Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_return_period: top rank gets max return period, identities hold") {
-    val rows = graft.ops.Round12cOps.queries("agg_return_period")(spark, sf)
+    val rows = SparkEntry.queries("agg_return_period")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, g) =>
@@ -71,7 +71,7 @@ class Round12Wave20Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_edit_distance: metric laws against an independent DP replay") {
-    val rows = graft.ops.Round12cOps.queries("fn_edit_distance")(spark, sf)
+    val rows = SparkEntry.queries("fn_edit_distance")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     def lev(a: String, b: String): Int = {

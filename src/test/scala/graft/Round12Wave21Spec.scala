@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave21Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_shoelace_area: matches an independent Scala shoelace replay") {
-    val rows = graft.ops.Round12cOps.queries("fn_shoelace_area")(spark, sf)
+    val rows = SparkEntry.queries("fn_shoelace_area")(spark, sf)
       .collect()
     assert(rows.length === 5)
     // rebuild the vertex lists exactly as the op defines them
@@ -36,7 +36,7 @@ class Round12Wave21Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_point_in_polygon: agrees with an independent float ray-caster") {
-    val rows = graft.ops.Round12cOps.queries("fn_point_in_polygon")(spark, sf)
+    val rows = SparkEntry.queries("fn_point_in_polygon")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val hex = Seq((100, 20), (180, 60), (180, 140), (100, 180),
@@ -60,7 +60,7 @@ class Round12Wave21Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_grid_knn: returned triple is the true Manhattan top-3") {
-    val rows = graft.ops.Round12cOps.queries("fn_grid_knn")(spark, sf)
+    val rows = SparkEntry.queries("fn_grid_knn")(spark, sf)
       .collect()
     val pks = graft.Tables.part(spark, sf)
       .where("p_partkey % 11 = 4").select("p_partkey")
@@ -77,7 +77,7 @@ class Round12Wave21Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_bresenham_line: unit x-steps, y monotone with |Δy| <= 1, endpoints exact") {
-    val rows = graft.ops.Round12cOps.queries("fn_bresenham_line")(spark, sf)
+    val rows = SparkEntry.queries("fn_bresenham_line")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (_, g) =>

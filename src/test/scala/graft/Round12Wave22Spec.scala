@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave22Spec extends AnyFunSuite with SparkFixture {
 
   test("mm_aspect_bucket: every image lands in its true argmin bucket") {
-    val rows = graft.ops.Round12cOps.queries("mm_aspect_bucket")(spark, sf)
+    val rows = SparkEntry.queries("mm_aspect_bucket")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(1)).sum
@@ -27,7 +27,7 @@ class Round12Wave22Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_morans_i: |I| bounded, E[I] identity, W even (symmetric rook)") {
-    val r = graft.ops.Round12cOps.queries("agg_morans_i")(spark, sf)
+    val r = SparkEntry.queries("agg_morans_i")(spark, sf)
       .collect().head
     val (n, w, den, i, ei) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4), r.getLong(5))
@@ -40,7 +40,7 @@ class Round12Wave22Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("warehouse_mv_incremental: merge equals a direct full aggregate") {
-    val got = graft.ops.Round12cOps.queries("warehouse_mv_incremental")(
+    val got = SparkEntry.queries("warehouse_mv_incremental")(
       spark, sf).collect()
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -60,7 +60,7 @@ class Round12Wave22Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("llm_concat_packing: spans tile the token stream, straddle law") {
-    val rows = graft.ops.Round12cOps.queries("llm_concat_packing")(spark, sf)
+    val rows = SparkEntry.queries("llm_concat_packing")(spark, sf)
       .collect().sortBy(_.getLong(0))
     assert(rows.nonEmpty)
     var expectStart = 0L

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave23Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_knox_test: X <= min(S,T), pair counts consistent") {
-    val r = graft.ops.Round12cOps.queries("agg_knox_test")(spark, sf)
+    val r = SparkEntry.queries("agg_knox_test")(spark, sf)
       .collect().head
     val (n, np, sp, tp, xp) = (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4))
@@ -19,7 +19,7 @@ class Round12Wave23Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_damm_check: detects every single-digit substitution") {
-    val rows = graft.ops.Round12cOps.queries("fn_damm_check")(spark, sf)
+    val rows = SparkEntry.queries("fn_damm_check")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val tbl = ("0317598642" + "7092154863" + "4206871359" + "1750983426" +
@@ -45,7 +45,7 @@ class Round12Wave23Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_palma_ratio: shares consistent, decile partition sound") {
-    val rows = graft.ops.Round12cOps.queries("agg_palma_ratio")(spark, sf)
+    val rows = SparkEntry.queries("agg_palma_ratio")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -62,7 +62,7 @@ class Round12Wave23Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_td_setup: streaks reset on breaks, replayed independently") {
-    val rows = graft.ops.Round12cOps.queries("win_td_setup")(spark, sf)
+    val rows = SparkEntry.queries("win_td_setup")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, g) =>

@@ -27,7 +27,7 @@ class Round12Wave24Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_isqrt_native: per-row law s^2 <= v < (s+1)^2") {
-    val rows = graft.ops.Round12cOps.queries("fn_isqrt_native")(spark, sf)
+    val rows = SparkEntry.queries("fn_isqrt_native")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -39,7 +39,7 @@ class Round12Wave24Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_integer_stddev: floor law n·sd <= sqrt(var_num) < n·(sd+1)") {
-    val rows = graft.ops.Round12cOps.queries("agg_integer_stddev")(spark, sf)
+    val rows = SparkEntry.queries("agg_integer_stddev")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -51,7 +51,7 @@ class Round12Wave24Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_price_index: Paasche <= Laspeyres bracket not required, but both positive and Fisher^2 = L·P") {
-    val r = graft.ops.Round12cOps.queries("agg_price_index")(spark, sf)
+    val r = SparkEntry.queries("agg_price_index")(spark, sf)
       .collect().head
     val (n, l, p, f2) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
@@ -63,7 +63,7 @@ class Round12Wave24Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_fib_retracement: levels ordered, nearest is the true argmin") {
-    val rows = graft.ops.Round12cOps.queries("win_fib_retracement")(spark, sf)
+    val rows = SparkEntry.queries("win_fib_retracement")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

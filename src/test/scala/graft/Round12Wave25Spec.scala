@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave25Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_sharpe_ratio: sd_n is the exact root, ratio identity") {
-    val rows = graft.ops.Round12cOps.queries("agg_sharpe_ratio")(spark, sf)
+    val rows = SparkEntry.queries("agg_sharpe_ratio")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -24,7 +24,7 @@ class Round12Wave25Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_rsa_modpow: roundtrip for every message, matches BigInt modPow") {
-    val rows = graft.ops.Round12cOps.queries("fn_rsa_modpow")(spark, sf)
+    val rows = SparkEntry.queries("fn_rsa_modpow")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -39,7 +39,7 @@ class Round12Wave25Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_fletcher16: closed form equals the sequential definition") {
-    val rows = graft.ops.Round12cOps.queries("fn_fletcher16")(spark, sf)
+    val rows = SparkEntry.queries("fn_fletcher16")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -53,7 +53,7 @@ class Round12Wave25Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_information_ratio: benchmark excluded, root law holds") {
-    val rows = graft.ops.Round12cOps.queries("win_information_ratio")(
+    val rows = SparkEntry.queries("win_information_ratio")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     assert(!rows.exists(_.getString(0) == "view"), "benchmark not scored")

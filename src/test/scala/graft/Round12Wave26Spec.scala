@@ -31,7 +31,7 @@ class Round12Wave26Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_verhoeff_check: replay + substitution AND transposition detection") {
-    val rows = graft.ops.Round12cOps.queries("fn_verhoeff_check")(spark, sf)
+    val rows = SparkEntry.queries("fn_verhoeff_check")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -53,7 +53,7 @@ class Round12Wave26Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_josephus: closed form equals a direct simulation") {
-    val rows = graft.ops.Round12cOps.queries("fn_josephus")(spark, sf)
+    val rows = SparkEntry.queries("fn_josephus")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     def simulate(n: Int): Int = {
@@ -72,7 +72,7 @@ class Round12Wave26Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_mcclellan_osc: breadth identity, adv+dec bounded by series count") {
-    val rows = graft.ops.Round12cOps.queries("win_mcclellan_osc")(spark, sf)
+    val rows = SparkEntry.queries("win_mcclellan_osc")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -84,7 +84,7 @@ class Round12Wave26Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_mad_outliers: MAD is the true lower median of deviations") {
-    val rows = graft.ops.Round12cOps.queries("agg_mad_outliers")(spark, sf)
+    val rows = SparkEntry.queries("agg_mad_outliers")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

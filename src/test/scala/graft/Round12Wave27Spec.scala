@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave27Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_cantor_pairing: exact bijection both directions") {
-    val rows = graft.ops.Round12cOps.queries("fn_cantor_pairing")(spark, sf)
+    val rows = SparkEntry.queries("fn_cantor_pairing")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -23,7 +23,7 @@ class Round12Wave27Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_ulam_spiral: closed form equals an imperative spiral walker") {
-    val rows = graft.ops.Round12cOps.queries("fn_ulam_spiral")(spark, sf)
+    val rows = SparkEntry.queries("fn_ulam_spiral")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     // walk the spiral once up to the max n, recording coordinates
@@ -59,7 +59,7 @@ class Round12Wave27Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_gray_code: roundtrip exact, successive codes differ in ONE bit") {
-    val rows = graft.ops.Round12cOps.queries("fn_gray_code")(spark, sf)
+    val rows = SparkEntry.queries("fn_gray_code")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -71,7 +71,7 @@ class Round12Wave27Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_kish_deff: deff >= 1000 (Cauchy-Schwarz), neff <= 1000·n") {
-    val rows = graft.ops.Round12cOps.queries("agg_kish_deff")(spark, sf)
+    val rows = SparkEntry.queries("agg_kish_deff")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

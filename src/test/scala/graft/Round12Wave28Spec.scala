@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave28Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_amortization: imperative 12-month replay, balance stays positive") {
-    val rows = graft.ops.Round12dOps.queries("fn_amortization")(spark, sf)
+    val rows = SparkEntry.queries("fn_amortization")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -27,7 +27,7 @@ class Round12Wave28Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_payback_period: crossing month is the true first crossing") {
-    val rows = graft.ops.Round12dOps.queries("agg_payback_period")(spark, sf)
+    val rows = SparkEntry.queries("agg_payback_period")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -42,7 +42,7 @@ class Round12Wave28Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_kelly_criterion: sign follows the edge, stake clamped") {
-    val rows = graft.ops.Round12dOps.queries("fn_kelly_criterion")(spark, sf)
+    val rows = SparkEntry.queries("fn_kelly_criterion")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -58,7 +58,7 @@ class Round12Wave28Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_odds_convert: implied prob inverts decimal odds, branch law") {
-    val rows = graft.ops.Round12dOps.queries("fn_odds_convert")(spark, sf)
+    val rows = SparkEntry.queries("fn_odds_convert")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave29Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_bezier_points: endpoints exact, curve inside the control hull") {
-    val rows = graft.ops.Round12dOps.queries("fn_bezier_points")(spark, sf)
+    val rows = SparkEntry.queries("fn_bezier_points")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (_, g) =>
@@ -29,7 +29,7 @@ class Round12Wave29Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_tema: blend identity and lag-kill (tema tracks closer than e3)") {
-    val rows = graft.ops.Round12dOps.queries("win_tema")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_tema")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(6) === 3 * r.getLong(3) - 3 * r.getLong(4) +
@@ -42,7 +42,7 @@ class Round12Wave29Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_chebyshev_coverage: empirical coverage beats the 1-1/k^2 floor") {
-    val rows = graft.ops.Round12dOps.queries("agg_chebyshev_coverage")(
+    val rows = SparkEntry.queries("agg_chebyshev_coverage")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -56,7 +56,7 @@ class Round12Wave29Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_continued_fraction: best convergent beats every k<=50 rational") {
-    val rows = graft.ops.Round12dOps.queries("fn_continued_fraction")(
+    val rows = SparkEntry.queries("fn_continued_fraction")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.take(20).foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave30Spec extends AnyFunSuite with SparkFixture {
 
   test("set_symmetric_diff: disjoint surpluses, never double-counted") {
-    val rows = graft.ops.Round12dOps.queries("set_symmetric_diff")(spark, sf)
+    val rows = SparkEntry.queries("set_symmetric_diff")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(1) >= 1))
@@ -17,7 +17,7 @@ class Round12Wave30Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("ds_typed_mapgroups: typed fold equals the relational aggregates") {
-    val rows = graft.ops.Round12dOps.queries("ds_typed_mapgroups")(spark, sf)
+    val rows = SparkEntry.queries("ds_typed_mapgroups")(spark, sf)
       .collect()
     assert(rows.length === 5)
     rows.foreach { r =>
@@ -29,7 +29,7 @@ class Round12Wave30Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("api_melt: 3 rows per nation, values match the wide frame") {
-    val rows = graft.ops.Round12dOps.queries("api_melt")(spark, sf).collect()
+    val rows = SparkEntry.queries("api_melt")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getLong(0)).foreach { case (_, g) =>
       assert(g.length === 3)
@@ -42,7 +42,7 @@ class Round12Wave30Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_doomsday_dow: agrees with both engines AND java.time") {
-    val rows = graft.ops.Round12dOps.queries("fn_doomsday_dow")(spark, sf)
+    val rows = SparkEntry.queries("fn_doomsday_dow")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave31Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_resistor_code: ohms roundtrip through color bands") {
-    val rows = graft.ops.Round12dOps.queries("fn_resistor_code")(spark, sf)
+    val rows = SparkEntry.queries("fn_resistor_code")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val colors = Seq("black", "brown", "red", "orange", "yellow",
@@ -23,7 +23,7 @@ class Round12Wave31Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_seven_segment: totals replayed, bounds hold") {
-    val rows = graft.ops.Round12dOps.queries("fn_seven_segment")(spark, sf)
+    val rows = SparkEntry.queries("fn_seven_segment")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     val segs = "6255456376".map(_ - '0')
@@ -36,7 +36,7 @@ class Round12Wave31Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_logistic_map: stays in [0, 1e6], imperative replay exact") {
-    val rows = graft.ops.Round12dOps.queries("fn_logistic_map")(spark, sf)
+    val rows = SparkEntry.queries("fn_logistic_map")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -55,7 +55,7 @@ class Round12Wave31Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_coppock: weighted sum identity on a replayed window") {
-    val rows = graft.ops.Round12dOps.queries("win_coppock")(spark, sf)
+    val rows = SparkEntry.queries("win_coppock")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getString(0)).foreach { case (_, g) =>

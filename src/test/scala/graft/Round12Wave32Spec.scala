@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave32Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_iban_check: check digits match BigInt mod-97, all validate") {
-    val rows = graft.ops.Round12dOps.queries("fn_iban_check")(spark, sf)
+    val rows = SparkEntry.queries("fn_iban_check")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -23,7 +23,7 @@ class Round12Wave32Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_hurst_rs: R/S within the sqrt-bounds of a bounded walk") {
-    val rows = graft.ops.Round12dOps.queries("agg_hurst_rs")(spark, sf)
+    val rows = SparkEntry.queries("agg_hurst_rs")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -41,7 +41,7 @@ class Round12Wave32Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("mm_keyframe_plan: ceil-DIV laws, sample count near the 16 target") {
-    val rows = graft.ops.Round12dOps.queries("mm_keyframe_plan")(spark, sf)
+    val rows = SparkEntry.queries("mm_keyframe_plan")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -57,7 +57,7 @@ class Round12Wave32Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_quartile_dispersion: Q1 <= Q3, QCD in (0, 1e6), ranks exact") {
-    val rows = graft.ops.Round12dOps.queries("agg_quartile_dispersion")(
+    val rows = SparkEntry.queries("agg_quartile_dispersion")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

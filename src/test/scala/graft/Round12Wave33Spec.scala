@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave33Spec extends AnyFunSuite with SparkFixture {
 
   test("win_cmo: bounded ±1e6, sign matches the gain/loss balance") {
-    val rows = graft.ops.Round12dOps.queries("win_cmo")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_cmo")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (up, dn, cmo) = (r.getLong(2), r.getLong(3), r.getLong(4))
@@ -19,7 +19,7 @@ class Round12Wave33Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("warehouse_rle_estimate: sorting collapses runs to the cardinality") {
-    val r = graft.ops.Round12dOps.queries("warehouse_rle_estimate")(
+    val r = SparkEntry.queries("warehouse_rle_estimate")(
       spark, sf).collect().head
     val (n, runsKey, runsSorted) = (r.getLong(0), r.getLong(1), r.getLong(2))
     assert(runsSorted <= 3, "sorted runs = distinct status count")
@@ -30,7 +30,7 @@ class Round12Wave33Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("warehouse_delta_estimate: bit width covers max delta exactly") {
-    val rows = graft.ops.Round12dOps.queries("warehouse_delta_estimate")(
+    val rows = SparkEntry.queries("warehouse_delta_estimate")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -43,7 +43,7 @@ class Round12Wave33Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_crt_roundtrip: bijection on [0, 1001), Bezout constants sound") {
-    val rows = graft.ops.Round12dOps.queries("fn_crt_roundtrip")(spark, sf)
+    val rows = SparkEntry.queries("fn_crt_roundtrip")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

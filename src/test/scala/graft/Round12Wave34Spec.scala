@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave34Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_barycentric_coords: lambdas sum to the doubled area, inside law") {
-    val rows = graft.ops.Round12dOps.queries("fn_barycentric_coords")(
+    val rows = SparkEntry.queries("fn_barycentric_coords")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -20,7 +20,7 @@ class Round12Wave34Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_heron_area: product replay, root floor law, triangle inequality") {
-    val rows = graft.ops.Round12dOps.queries("fn_heron_area")(spark, sf)
+    val rows = SparkEntry.queries("fn_heron_area")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -37,7 +37,7 @@ class Round12Wave34Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_dpo: equals close minus the replayed shifted SMA") {
-    val rows = graft.ops.Round12dOps.queries("win_dpo")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_dpo")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(4) === r.getLong(2) - r.getLong(3))
@@ -47,7 +47,7 @@ class Round12Wave34Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_modinv_fermat: v·inv ≡ 1 (mod p) for every sampled v") {
-    val rows = graft.ops.Round12dOps.queries("fn_modinv_fermat")(spark, sf)
+    val rows = SparkEntry.queries("fn_modinv_fermat")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

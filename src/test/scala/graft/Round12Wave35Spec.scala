@@ -11,7 +11,7 @@ class Round12Wave35Spec extends AnyFunSuite with SparkFixture {
     21L, 13L, 8L, 5L, 3L, 2L, 1L)
 
   test("fn_zeckendorf: reconstruction + the no-adjacent-terms theorem") {
-    val rows = graft.ops.Round12dOps.queries("fn_zeckendorf")(spark, sf)
+    val rows = SparkEntry.queries("fn_zeckendorf")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -30,7 +30,7 @@ class Round12Wave35Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_collatz_steps: equals the imperative orbit, peak recorded") {
-    val rows = graft.ops.Round12dOps.queries("fn_collatz_steps")(spark, sf)
+    val rows = SparkEntry.queries("fn_collatz_steps")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -47,7 +47,7 @@ class Round12Wave35Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_negabinary: bijective roundtrip over negatives and positives") {
-    val rows = graft.ops.Round12dOps.queries("fn_negabinary")(spark, sf)
+    val rows = SparkEntry.queries("fn_negabinary")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -60,7 +60,7 @@ class Round12Wave35Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_mean_abs_dev: L1 <= L2 (by Cauchy-Schwarz vs integer stddev)") {
-    val rows = graft.ops.Round12dOps.queries("agg_mean_abs_dev")(spark, sf)
+    val rows = SparkEntry.queries("agg_mean_abs_dev")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave36Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_happy_number: agrees with the classic cycle-detection replay") {
-    val rows = graft.ops.Round12dOps.queries("fn_happy_number")(spark, sf)
+    val rows = SparkEntry.queries("fn_happy_number")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     def happy(n0: Long): Boolean = {
@@ -27,7 +27,7 @@ class Round12Wave36Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_kaprekar_6174: every non-repdigit seed reaches 6174 (theorem)") {
-    val rows = graft.ops.Round12dOps.queries("fn_kaprekar_6174")(spark, sf)
+    val rows = SparkEntry.queries("fn_kaprekar_6174")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -37,7 +37,7 @@ class Round12Wave36Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_digital_root: closed form == walked steps, persistence replay") {
-    val rows = graft.ops.Round12dOps.queries("fn_digital_root")(spark, sf)
+    val rows = SparkEntry.queries("fn_digital_root")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -51,7 +51,7 @@ class Round12Wave36Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_coeff_variation: root law and ratio identity") {
-    val rows = graft.ops.Round12dOps.queries("agg_coeff_variation")(
+    val rows = SparkEntry.queries("agg_coeff_variation")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

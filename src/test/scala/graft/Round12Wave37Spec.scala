@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave37Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_aliquot_sum: matches brute-force divisor sums, classes sound") {
-    val rows = graft.ops.Round12dOps.queries("fn_aliquot_sum")(spark, sf)
+    val rows = SparkEntry.queries("fn_aliquot_sum")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -21,7 +21,7 @@ class Round12Wave37Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_atkinson_eps2: HM <= AM so the index is in [0, 1e6)") {
-    val rows = graft.ops.Round12dOps.queries("agg_atkinson_eps2")(spark, sf)
+    val rows = SparkEntry.queries("agg_atkinson_eps2")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -33,7 +33,7 @@ class Round12Wave37Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_psy_line: census bounded by the frame") {
-    val rows = graft.ops.Round12dOps.queries("win_psy_line")(spark, sf)
+    val rows = SparkEntry.queries("win_psy_line")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -44,7 +44,7 @@ class Round12Wave37Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_pvo: sign-split identity, bounded below by -1e6") {
-    val rows = graft.ops.Round12dOps.queries("win_pvo")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_pvo")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (f, sl, pvo) = (r.getLong(3), r.getLong(4), r.getLong(5))

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave38Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_bcd_roundtrip: exact both ways, BCD never smaller") {
-    val rows = graft.ops.Round12dOps.queries("fn_bcd_roundtrip")(spark, sf)
+    val rows = SparkEntry.queries("fn_bcd_roundtrip")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -22,7 +22,7 @@ class Round12Wave38Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_excel_column: matches an independent bijective-26 encoder") {
-    val rows = graft.ops.Round12dOps.queries("fn_excel_column")(spark, sf)
+    val rows = SparkEntry.queries("fn_excel_column")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     def enc(n0: Long): String = {
@@ -41,7 +41,7 @@ class Round12Wave38Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_pareto_8020: picked rank is the minimal 80% cover") {
-    val rows = graft.ops.Round12dOps.queries("agg_pareto_8020")(spark, sf)
+    val rows = SparkEntry.queries("agg_pareto_8020")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -55,7 +55,7 @@ class Round12Wave38Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_isbn10_check: every generated ISBN validates, X used for rem 10") {
-    val rows = graft.ops.Round12dOps.queries("fn_isbn10_check")(spark, sf)
+    val rows = SparkEntry.queries("fn_isbn10_check")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave39Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_egyptian_fraction: 1/c1+1/c2+1/c3+p3/q3 == p0/q0 exactly") {
-    val rows = graft.ops.Round12dOps.queries("fn_egyptian_fraction")(
+    val rows = SparkEntry.queries("fn_egyptian_fraction")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -29,7 +29,7 @@ class Round12Wave39Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_tsi: bounded ±1e6, |m2| <= a2 (double-smoothed triangle law)") {
-    val rows = graft.ops.Round12dOps.queries("win_tsi")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_tsi")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (m2, a2, tsi) = (r.getLong(3), r.getLong(4), r.getLong(5))
@@ -45,7 +45,7 @@ class Round12Wave39Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_hoover_index: in [0, 0.5e6], identity vs mean-abs-dev form") {
-    val rows = graft.ops.Round12dOps.queries("agg_hoover_index")(spark, sf)
+    val rows = SparkEntry.queries("agg_hoover_index")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave40Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_mayan_long_count: roundtrip + component bounds") {
-    val rows = graft.ops.Round12dOps.queries("fn_mayan_long_count")(
+    val rows = SparkEntry.queries("fn_mayan_long_count")(
       spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -23,7 +23,7 @@ class Round12Wave40Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_cr4: top-4 share consistent and above the uniform floor") {
-    val rows = graft.ops.Round12dOps.queries("agg_cr4")(spark, sf).collect()
+    val rows = SparkEntry.queries("agg_cr4")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, total, top4, cr4) =
@@ -36,7 +36,7 @@ class Round12Wave40Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_gauss_circle: N(r) within the classic O(r) error of pi r^2") {
-    val rows = graft.ops.Round12dOps.queries("fn_gauss_circle")(spark, sf)
+    val rows = SparkEntry.queries("fn_gauss_circle")(spark, sf)
       .collect()
     assert(rows.length === 5)
     rows.foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave41Spec extends AnyFunSuite with SparkFixture {
 
   test("win_awesome_osc: ao = sma5 - sma13, saucer = rising ao") {
-    val rows = graft.ops.Round12dOps.queries("win_awesome_osc")(spark, sf)
+    val rows = SparkEntry.queries("win_awesome_osc")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(5) === r.getLong(3) - r.getLong(4)))
@@ -23,7 +23,7 @@ class Round12Wave41Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_text_histogram: widths exact, the max segment gets 20 hashes") {
-    val rows = graft.ops.Round12dOps.queries("fn_text_histogram")(spark, sf)
+    val rows = SparkEntry.queries("fn_text_histogram")(spark, sf)
       .collect()
     assert(rows.length === 5)
     val mx = rows.map(_.getLong(1)).max
@@ -36,7 +36,7 @@ class Round12Wave41Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_mase_naive: identity and positive error masses") {
-    val rows = graft.ops.Round12dOps.queries("agg_mase_naive")(spark, sf)
+    val rows = SparkEntry.queries("agg_mase_naive")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave42Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_leap_count: engine agreement + java.time replay") {
-    val rows = graft.ops.Round12dOps.queries("fn_leap_count")(spark, sf)
+    val rows = SparkEntry.queries("fn_leap_count")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -23,7 +23,7 @@ class Round12Wave42Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("agg_xbar_r_chart: limits symmetric, flags consistent, ranges sane") {
-    val rows = graft.ops.Round12dOps.queries("agg_xbar_r_chart")(spark, sf)
+    val rows = SparkEntry.queries("agg_xbar_r_chart")(spark, sf)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

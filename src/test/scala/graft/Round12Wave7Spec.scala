@@ -12,13 +12,28 @@ class Round12Wave7Spec extends AnyFunSuite with SparkFixture {
     assert(mor.map(_.toString).toSeq == compacted.map(_.toString).toSeq)
     // the compacted read must not touch delta dirs: the new base holds
     // the full merged row count
-    val root = graft.ops.Scratch.opDir("hive_acid", sf)
+    val root = graft.ops.Scratch.opDir("hive_acid_major", sf)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, "base_0000003")))
     // the ACID-shaped file needs the hive ORC path (see the op's comment)
     spark.conf.set("spark.sql.orc.impl", "hive")
     val n = try spark.read.orc(s"$root/base_0000003").count()
     finally spark.conf.unset("spark.sql.orc.impl")
     assert(n == mor.map(_.getLong(1)).sum)
+  }
+
+  test("sink_hive_acid_compact: compacts on every call, never in the read op's layout") {
+    def baseFiles(prefix: String): Set[String] = {
+      val base = new java.io.File(graft.ops.Scratch.opDir(prefix, sf), "base_0000003")
+      Option(base.listFiles).map(_.map(_.getName).toSet).getOrElse(Set.empty[String])
+    }
+    SparkEntry.queries("sink_hive_acid_compact")(spark, sf).collect()
+    val first = baseFiles("hive_acid_major")
+    SparkEntry.queries("source_hive_acid_read")(spark, sf).collect()
+    assert(baseFiles("hive_acid").isEmpty, "the compaction wrote into source_hive_acid_read's layout")
+    SparkEntry.queries("sink_hive_acid_compact")(spark, sf).collect()
+    val second = baseFiles("hive_acid_major")
+    assert(first.exists(_.endsWith(".orc")) && second.exists(_.endsWith(".orc")))
+    assert((first & second).forall(!_.endsWith(".orc")), "a second call did not rewrite base_0000003")
   }
 
   test("llm_toxicity_lexicon: corpus rate aggregates the per-doc tallies") {

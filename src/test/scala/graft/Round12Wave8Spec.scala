@@ -19,7 +19,7 @@ class Round12Wave8Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("api_identifier_clause matches the literal-identifier plan") {
-    val viaParam = graft.ops.Round12bOps.queries("api_identifier_clause")(spark, sf)
+    val viaParam = SparkEntry.queries("api_identifier_clause")(spark, sf)
     graft.Tables.orders(spark, sf).createOrReplaceTempView("graft_ident_orders_v")
     val literal = spark.sql(
       """SELECT o_orderstatus, COUNT(*) AS n_orders,
@@ -30,7 +30,7 @@ class Round12Wave8Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_easter_computus reproduces known Easter dates") {
-    val rows = graft.ops.Round12bOps.queries("fn_easter_computus")(spark, sf)
+    val rows = SparkEntry.queries("fn_easter_computus")(spark, sf)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rows(2024L) === ((3L, 31L))) // 2024-03-31
     assert(rows(2025L) === ((4L, 20L))) // 2025-04-20
@@ -53,7 +53,7 @@ class Round12Wave8Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_williams_r zones partition every observation") {
-    val out = graft.ops.Round12bOps.queries("win_williams_r")(spark, sf).collect()
+    val out = SparkEntry.queries("win_williams_r")(spark, sf).collect()
     assert(out.nonEmpty)
     out.foreach { row =>
       val (n, ob, os, tr) = (row.getLong(1), row.getLong(2), row.getLong(3), row.getLong(4))

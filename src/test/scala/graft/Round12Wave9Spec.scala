@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round12Wave9Spec extends AnyFunSuite with SparkFixture {
 
   test("win_keltner bands bracket the midline and classify correctly") {
-    val rows = graft.ops.Round12bOps.queries("win_keltner")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_keltner")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (cents, mid, up, low, pos) =
@@ -19,7 +19,7 @@ class Round12Wave9Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("win_mfi stays in [0, 1e6] and pos14+neg14 bounds the flow") {
-    val rows = graft.ops.Round12bOps.queries("win_mfi")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_mfi")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (pos14, neg14, mfi) = (r.getLong(4), r.getLong(5), r.getLong(6))
@@ -31,7 +31,7 @@ class Round12Wave9Spec extends AnyFunSuite with SparkFixture {
   test("win_cci mean deviation is anchored on the window's own mean") {
     // CCI of a constant series is 0 (dsum = 0 guard); a pure trend gives
     // a positive cci at the top of the window.
-    val rows = graft.ops.Round12bOps.queries("win_cci")(spark, sf).collect()
+    val rows = SparkEntry.queries("win_cci")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (tp, s20, dsum, cci) = (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
@@ -48,7 +48,7 @@ class Round12Wave9Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("fn_semver_compare orders release after prerelease, fields numerically") {
-    val rows = graft.ops.Round12bOps.queries("fn_semver_compare")(spark, sf)
+    val rows = SparkEntry.queries("fn_semver_compare")(spark, sf)
       .collect().map(r => (r.getString(1), r.getLong(2)))
     val rank = rows.toMap
     assert(rows.nonEmpty)

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 waves 16+ (Round13bOps): Bradley–Terry arena ranking,
   * idempotency-replay audit, MRZ check-digit validation.
   */
-class Round13Wave16Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round13Wave16Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_bradley_terry: fitted strengths recover the planted order") {
     val rows = SparkEntry.queries("agg_bradley_terry")(spark, sf)

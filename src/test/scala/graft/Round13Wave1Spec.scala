@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 wave 1: Unicode normalization audit, ACID overlapping-
   * compaction read, audio VAD chunk plan. */
-class Round13Wave1Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round13Wave1Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_unicode_normalize_audit: only the decomposed class is NFC-unstable") {
     val rows = SparkEntry.queries("llm_unicode_normalize_audit")(spark, sf).collect()

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 waves 24+ (Round13cOps): concurrent sessions, A/B exposure
   * integrity, context-growth planning.
   */
-class Round13Wave24Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round13Wave24Spec extends AnyFunSuite with SparkFixture {
 
   test("service_concurrent_sessions: sweep conserves sessions, overlaps bound") {
     val rows = SparkEntry.queries("service_concurrent_sessions")(spark, sf)

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 wave 3: ACID minor compaction + aborted-txn visibility,
   * admission quota, speculative-decoding plan. */
-class Round13Wave3Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round13Wave3Spec extends AnyFunSuite with SparkFixture {
 
   test("sink_hive_acid_minor_compact: merged span replaces the originals, deletes still hit") {
     val got = SparkEntry.queries("sink_hive_acid_minor_compact")(spark, sf)

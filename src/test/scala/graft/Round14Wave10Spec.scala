@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 waves 10-11 (Round14Ops): transliteration fold, synthetic
   * identity, chargeback lag, Cohen's kappa, label noise, forgetting score.
   */
-class Round14Wave10Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round14Wave10Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_transliterate_fold: raw misses accents, fold recovers everything") {
     val rows = SparkEntry.queries("fn_transliterate_fold")(spark, sf).collect()

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 wave 1 (Round14Ops): identity-graph clustering, householding,
   * DSAR fulfilment SLA — the person-service seams from the round-13 brief.
   */
-class Round14Wave1Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round14Wave1Spec extends AnyFunSuite with SparkFixture {
 
   test("join_identity_clusters: components partition all records, bridges over-link") {
     val rows = SparkEntry.queries("join_identity_clusters")(spark, sf).collect()

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 wave 4 (Round14Ops): equivalised household income, KV-cache
   * capacity packing, capture–recapture coverage estimation.
   */
-class Round14Wave4Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round14Wave4Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_household_equivalence: equivalising always shrinks multi-member income") {
     val rows = SparkEntry.queries("agg_household_equivalence")(spark, sf).collect()

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 wave 6 (Round14Ops): tool-call audit, column-grain lineage,
   * color quantization.
   */
-class Round14Wave6Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round14Wave6Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_tool_call_audit: failure classes partition malformed calls") {
     val rows = SparkEntry.queries("llm_tool_call_audit")(spark, sf).collect()

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 wave 8 (Round14Ops): quorum staleness, vector clocks, HLC —
   * the multi-region consistency arithmetic of a replicated person-store.
   */
-class Round14Wave8Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round14Wave8Spec extends AnyFunSuite with SparkFixture {
 
   test("service_quorum_staleness: stale share matches the lag/delay geometry") {
     val rows = SparkEntry.queries("service_quorum_staleness")(spark, sf).collect()

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 10 (Round15Ops): dirty-data models — keyboard-adjacency
   * typos, OCR glyph-confusion repair, Flesch readability.
   */
-class Round15Wave10Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave10Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_keyboard_typo_model: the 85/15 fat-finger split is recovered") {
     val rows = SparkEntry.queries("fn_keyboard_typo_model")(spark, sf).collect()

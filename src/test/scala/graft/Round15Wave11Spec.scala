@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 11 (Round15Ops): Louvain pass, grid-DBSCAN, IBAN mod-97. */
-class Round15Wave11Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave11Spec extends AnyFunSuite with SparkFixture {
 
   test("graph_louvain_pass: communities partition the backbone, gains are positive") {
     val rows = SparkEntry.queries("graph_louvain_pass")(spark, sf).collect()

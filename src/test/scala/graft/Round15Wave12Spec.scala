@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 12 (Round15Ops): archive/container ingest — WebDataset
   * tar shards, zip shards, Hadoop SequenceFile.
   */
-class Round15Wave12Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave12Spec extends AnyFunSuite with SparkFixture {
 
   test("source_webdataset_shard: samples regroup, payload bytes conserve") {
     val rows = SparkEntry.queries("source_webdataset_shard")(spark, sf).collect()

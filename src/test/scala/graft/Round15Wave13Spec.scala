@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 13 (Round15Ops): SPC control chart, honorific strip,
   * deceased/gone-away suppression.
   */
-class Round15Wave13Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave13Spec extends AnyFunSuite with SparkFixture {
 
   test("win_control_chart: rule 1 catches the jump, rule 2 the drift") {
     val rows = SparkEntry.queries("win_control_chart")(spark, sf).collect()

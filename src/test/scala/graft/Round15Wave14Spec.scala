@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 14 (Round15Ops): age gate, DOB transposition, round-
   * number bias.
   */
-class Round15Wave14Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave14Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_age_gate: classes partition, consent flags are age-derived") {
     val rows = SparkEntry.queries("fn_age_gate")(spark, sf).collect()

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 15 (Round15Ops): actuarial family — chain ladder,
   * bonus-malus, Bühlmann credibility.
   */
-class Round15Wave15Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave15Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_chain_ladder: factors develop upward, projections extend the diagonal") {
     val rows = SparkEntry.queries("agg_chain_ladder")(spark, sf).collect()

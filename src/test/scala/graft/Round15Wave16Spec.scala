@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 16 (Round15Ops): exact-cents finance — amortization,
   * bond duration, binomial option lattice.
   */
-class Round15Wave16Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave16Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_loan_amortization: schedules close to within floor-rounding cents") {
     val rows = SparkEntry.queries("agg_loan_amortization")(spark, sf).collect()

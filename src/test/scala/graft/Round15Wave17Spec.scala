@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 17 (Round15Ops): data-safety — PII scan, secret scan,
   * PMI collocations.
   */
-class Round15Wave17Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave17Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_pii_scan: each detector fires on its class and nowhere else") {
     val rows = SparkEntry.queries("llm_pii_scan")(spark, sf).collect()

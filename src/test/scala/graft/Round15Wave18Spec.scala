@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 18 (Round15Ops): ledger controls — trial balance, AR
   * aging, late-arriving facts.
   */
-class Round15Wave18Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave18Spec extends AnyFunSuite with SparkFixture {
 
   test("warehouse_trial_balance: imbalance equals the planted broken cents") {
     val rows = SparkEntry.queries("warehouse_trial_balance")(spark, sf).collect()

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 19 (Round15Ops): capacity/planning — Erlang-B, fill
   * rate, Laplace-smoothed CTR.
   */
-class Round15Wave19Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave19Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_erlang_b: blocking rises with offered load") {
     val rows = SparkEntry.queries("agg_erlang_b")(spark, sf).collect()

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 1 (Round15Ops): EM-estimated Fellegi–Sunter weights —
   * the round-14 verdict's top item. The EM must RECOVER the planted
   * per-field drift rates from the agreement-pattern counts alone.
   */
-class Round15Wave1Spec extends AnyFunSuite {
-
-  // the shared JVM-wide fixture session: one builder (SparkFixture)
-  // owns the root-session confs (extensions, scratch warehouse dir,
-  // derby metastore), so suite ordering can never race them
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave1Spec extends AnyFunSuite with SparkFixture {
 
   test("join_fs_em_weights: EM recovers the planted m/u rates") {
     val rows = SparkEntry.queries("join_fs_em_weights")(spark, sf).collect()

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 20 (Round15Ops): TF-adjusted FS linkage, ER split
   * detection, discounted CLV.
   */
-class Round15Wave20Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave20Spec extends AnyFunSuite with SparkFixture {
 
   test("join_fs_tf_adjust: rare names link through drift, common never on name alone") {
     val rows = SparkEntry.queries("join_fs_tf_adjust")(spark, sf).collect()

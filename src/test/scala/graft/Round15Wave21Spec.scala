@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 21 (Round15Ops): serving/embedding economics — batch
   * padding, int8 quantization, binary sketch.
   */
-class Round15Wave21Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave21Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_batch_padding: length bucketing beats arrival order everywhere") {
     val rows = SparkEntry.queries("llm_batch_padding")(spark, sf).collect()

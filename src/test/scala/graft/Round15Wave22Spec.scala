@@ -1,13 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 22 (Round15Ops): breakage, schema drift, turn truncation. */
-class Round15Wave22Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave22Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_gift_card_breakage: the ledger splits into breakage and liability") {
     val rows = SparkEntry.queries("agg_gift_card_breakage")(spark, sf).collect()

@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 2 (Round15Ops + StreamingOps): incremental entity
   * resolution with in-band idempotence, and the sanctions screen moved
   * onto the event stream.
   */
-class Round15Wave2Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave2Spec extends AnyFunSuite with SparkFixture {
 
   test("join_er_incremental: dispositions partition the batch, rerun is a no-op") {
     val rows = SparkEntry.queries("join_er_incremental")(spark, sf).collect()

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 4 (Round15Ops): hierarchical HNSW, nickname
   * canonicalization, money-mule network detection.
   */
-class Round15Wave4Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave4Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_ann_hnsw_layered: descent adapts the entry, recall is graded") {
     val rows = SparkEntry.queries("llm_ann_hnsw_layered")(spark, sf).collect()

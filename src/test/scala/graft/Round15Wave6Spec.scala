@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 6 (Round15Ops): the causal-inference family — interrupted
   * time series, synthetic control by donor matching, two-model uplift.
   */
-class Round15Wave6Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave6Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_interrupted_ts: the bucket-24 break reads in level AND slope") {
     val rows = SparkEntry.queries("agg_interrupted_ts")(spark, sf).collect()

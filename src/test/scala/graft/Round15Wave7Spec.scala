@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 7 (Round15Ops): the serving-SLO trio — sliding-window
   * rate limiter, retry budget, Apdex.
   */
-class Round15Wave7Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave7Spec extends AnyFunSuite with SparkFixture {
 
   test("service_sliding_window_limit: the burst cohort dominates over-limit") {
     val rows = SparkEntry.queries("service_sliding_window_limit")(spark, sf).collect()

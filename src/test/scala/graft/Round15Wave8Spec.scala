@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 8 (Round15Ops): the distributed-consistency trio — read
   * repair, Merkle anti-entropy, CRDT counter merge.
   */
-class Round15Wave8Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave8Spec extends AnyFunSuite with SparkFixture {
 
   test("service_read_repair: divergence and repair mass are consistent") {
     val rows = SparkEntry.queries("service_read_repair")(spark, sf).collect()

@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 wave 9 (Round15Ops): the LLM data-pipeline trio — reward-
   * hacking audit, RAG context-chunk dedup, synthetic-data mix gate.
   */
-class Round15Wave9Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round15Wave9Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_reward_hacking_audit: only the length-gamed variant flags") {
     val rows = SparkEntry.queries("llm_reward_hacking_audit")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 10 (Round16Ops): write-audit-publish, Bass diffusion,
   * NHS number checksum. */
-class Round16Wave10Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave10Spec extends AnyFunSuite with SparkFixture {
 
   test("warehouse_write_audit_publish: the dirty batch never reaches live") {
     val rows = SparkEntry.queries("warehouse_write_audit_publish")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 11 (Round16Ops): MoE capacity drops, counter rollover,
   * data contract. */
-class Round16Wave11Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave11Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_moe_capacity_drop: only the hot expert overflows") {
     val rows = SparkEntry.queries("llm_moe_capacity_drop")(spark, sf).collect()

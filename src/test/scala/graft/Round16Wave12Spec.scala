@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 12 (Round16Ops): OFAC ownership cascade, temporal
   * reachability, demand censoring. */
-class Round16Wave12Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave12Spec extends AnyFunSuite with SparkFixture {
 
   test("join_ownership_sanctions: the 50% rule cascades through levels") {
     val rows = SparkEntry.queries("join_ownership_sanctions")(spark, sf).collect()

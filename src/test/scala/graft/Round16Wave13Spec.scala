@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 13 (Round16Ops): four-eyes audit, embedding drift,
   * max-min fair allocation. */
-class Round16Wave13Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave13Spec extends AnyFunSuite with SparkFixture {
 
   test("join_four_eyes: R1 is exact, R2 carries the honest chance mass") {
     val rows = SparkEntry.queries("join_four_eyes")(spark, sf).collect()

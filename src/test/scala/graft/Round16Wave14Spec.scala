@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 14 (Round16Ops): settlement fails, BIC validation,
   * retrieval MRR. */
-class Round16Wave14Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave14Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_settlement_fails: the high-fail class ages worse everywhere") {
     val rows = SparkEntry.queries("agg_settlement_fails")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 15 (Round16Ops): deadline propagation, Erlang C,
   * order-book imbalance. */
-class Round16Wave15Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave15Spec extends AnyFunSuite with SparkFixture {
 
   test("service_deadline_budgets: the thin residual budget pays") {
     val rows = SparkEntry.queries("service_deadline_budgets")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 16 (Round16Ops): garnishment waterfall, VWAP execution,
   * SSN validation. */
-class Round16Wave16Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave16Spec extends AnyFunSuite with SparkFixture {
 
   test("join_garnishment_priority: seniority pays first under the ceiling") {
     val rows = SparkEntry.queries("join_garnishment_priority")(spark, sf).collect()

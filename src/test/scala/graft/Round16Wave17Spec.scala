@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 17 (Round16Ops): budget pacing, judge position bias,
   * subtitle drift. */
-class Round16Wave17Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave17Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_budget_pacing: spend never exceeds the paced budget") {
     val rows = SparkEntry.queries("agg_budget_pacing")(spark, sf).collect()

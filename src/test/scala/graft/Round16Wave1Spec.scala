@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 1 (Round16Ops): ANN erasure lifecycle, Wilson bounds,
   * James–Stein shrinkage. */
-class Round16Wave1Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave1Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_ann_index_delete: masking ≡ compaction, erased ids never served") {
     val rows = SparkEntry.queries("llm_ann_index_delete")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 2 (Round16Ops): multi-level Louvain, max-flow = min-cut,
   * TFRecord shard ingest. */
-class Round16Wave2Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave2Spec extends AnyFunSuite with SparkFixture {
 
   test("graph_louvain_levels: coarsening is monotone across levels") {
     val rows = SparkEntry.queries("graph_louvain_levels")(spark, sf).collect()

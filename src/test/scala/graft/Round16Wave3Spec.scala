@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 3 (Round16Ops): hierarchical geo cells, safety stock,
   * WebDataset index sidecars. */
-class Round16Wave3Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave3Spec extends AnyFunSuite with SparkFixture {
 
   test("join_geo_cell: containment holds, the ring finds every ε-pair") {
     val rows = SparkEntry.queries("join_geo_cell")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 4 (Round16Ops): articulation points, bridges, ABA
   * routing checksum. */
-class Round16Wave4Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave4Spec extends AnyFunSuite with SparkFixture {
 
   test("graph_articulation: exactly the bridge endpoints cut the chain") {
     val rows = SparkEntry.queries("graph_articulation")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 5 (Round16Ops): Holt–Winters, bitrate ladder, model
   * cascade routing. */
-class Round16Wave5Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave5Spec extends AnyFunSuite with SparkFixture {
 
   test("agg_holt_winters: trend and seasonal plants are recovered") {
     val rows = SparkEntry.queries("agg_holt_winters")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 6 (Round16Ops): varint shard codec, hedged requests,
   * biometric score fusion. */
-class Round16Wave6Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave6Spec extends AnyFunSuite with SparkFixture {
 
   test("source_varint_delimited: frames round-trip with exact overhead") {
     val rows = SparkEntry.queries("source_varint_delimited")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 7 (Round16Ops): ISIN checksum, wash trades, agent-trace
   * audit. */
-class Round16Wave7Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave7Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_isin_check: Luhn over the digitized expansion catches every plant") {
     val rows = SparkEntry.queries("fn_isin_check")(spark, sf).collect()

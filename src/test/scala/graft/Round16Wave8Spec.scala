@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 8 (Round16Ops): dataset cartography, backpressure queue,
   * device-fingerprint linking. */
-class Round16Wave8Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave8Spec extends AnyFunSuite with SparkFixture {
 
   test("llm_dataset_cartography: the map separates the planted dynamics") {
     val rows = SparkEntry.queries("llm_dataset_cartography")(spark, sf).collect()

@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 wave 9 (Round16Ops): Bech32 polymod, Hawkes burst detector,
   * propensity matching. */
-class Round16Wave9Spec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkFixture.spark
-  private val sf = "/root/testdata/sf0.001"
+class Round16Wave9Spec extends AnyFunSuite with SparkFixture {
 
   test("fn_bech32_check: the bijective LFSR catches every substitution") {
     val rows = SparkEntry.queries("fn_bech32_check")(spark, sf).collect()
