@@ -68,10 +68,11 @@ object GraphOps extends Family {
       |  JOIN supplier ON s_suppkey = l_suppkey
       |  GROUP BY 1, 2)""".stripMargin
 
-  /** Above-average-weight undirected backbone (the scale-free cut shared
-    * by the motif/path ops): und edge weight sums both orientations, the
-    * cut is the cross-multiplied exact-integer compare (tpch_q11 law). */
-  private def heavyBackbone(s: SparkSession, d: String): DataFrame = {
+  /** Above-average-weight undirected backbone edges (the scale-free cut
+    * shared by the motif/path ops), with their weight: und edge weight sums
+    * both orientations, the cut is the cross-multiplied exact-integer
+    * compare (tpch_q11 law). */
+  private def heavyCut(s: SparkSession, d: String): DataFrame = {
     val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"), col("w"))
@@ -79,23 +80,56 @@ object GraphOps extends Family {
     val tot = und.agg(sum("w").as("tw"), count(lit(1)).as("ne"))
     und.join(broadcast(tot))
       .where(col("w") * col("ne") > col("tw"))
-      .select("a", "b").localCheckpoint()
   }
 
-  /** Oracle twin of `heavyBackbone` (chains after EdgesCte). */
-  private val HeavyCte =
+  /** Oracle twin of `heavyCut` up to its last projection (chains after
+    * EdgesCte). */
+  private val UndCtes =
     """und AS MATERIALIZED (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
       |    CAST(SUM(w) AS BIGINT) AS w
       |  FROM edges WHERE src <> dst GROUP BY 1, 2),
-      |t AS MATERIALIZED (SELECT CAST(SUM(w) AS BIGINT) AS tw, COUNT(*) AS ne FROM und),
-      |h AS MATERIALIZED (SELECT a, b FROM und, t WHERE w * ne > tw)""".stripMargin
+      |t AS MATERIALIZED (SELECT CAST(SUM(w) AS BIGINT) AS tw, COUNT(*) AS ne FROM und)""".stripMargin
 
-  /** The heavy backbone, shared with Round11Ops.graph_coreness. */
-  private[ops] def backboneForCoreness(s: SparkSession, d: String): DataFrame =
-    heavyBackbone(s, d)
+  /** The heavy backbone's (a, b) pairs, shared with Round11Ops and
+    * Round12bOps. */
+  private[ops] def heavyBackbone(s: SparkSession, d: String): DataFrame =
+    heavyCut(s, d).select("a", "b").localCheckpoint()
+
+  /** Oracle twin of `heavyBackbone` (chains after EdgesCte). */
+  private val HeavyCte =
+    s"""$UndCtes,
+       |h AS MATERIALIZED (SELECT a, b FROM und, t WHERE w * ne > tw)""".stripMargin
 
   /** Oracle CTE prefix shared with Round11Ops (edges + heavy cut). */
   private[ops] def coreOracleCtes: String = s"$EdgesCte,\n$HeavyCte"
+
+  /** The heavy backbone as directed BIGINT (src, dst) edges, each edge in
+    * both orientations. */
+  private[ops] def undirected(heavy: DataFrame): DataFrame =
+    heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
+      .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+
+  /** Oracle twin of `undirected` over HeavyCte's `h`. */
+  private[ops] val BiCte =
+    """bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
+      |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h)""".stripMargin
+
+  /** Oracle twin of the BFS hop-distance loop over `nodes` and `bi`: `p0`
+    * puts every (u, v) pair at 0 (u = v) or 99 (unreached), and round i
+    * relaxes one hop (`c$i`) and keeps the minimum (`p$i`). The distances
+    * after the last round are in `p$rounds`. */
+  private[ops] def hopDistCtes(rounds: Int): String =
+    ("""p0 AS MATERIALIZED (SELECT n1.u, n2.u AS v,
+       |    CAST(CASE WHEN n1.u = n2.u THEN 0 ELSE 99 END AS BIGINT) AS dist
+       |  FROM nodes n1, nodes n2)""".stripMargin +: (1 to rounds).map { i =>
+      val p = s"p${i - 1}"
+      s"""c$i AS MATERIALIZED (SELECT $p.u, bi.dst AS v,
+         |    CAST(MIN($p.dist + 1) AS BIGINT) AS cand
+         |  FROM bi JOIN $p ON $p.v = bi.src GROUP BY 1, 2),
+         |p$i AS MATERIALIZED (SELECT q.u, q.v,
+         |    CAST(LEAST(q.dist, COALESCE(c$i.cand, 99)) AS BIGINT) AS dist
+         |  FROM $p q LEFT JOIN c$i ON c$i.u = q.u AND c$i.v = q.v)""".stripMargin
+    }).mkString(",\n")
 
   /** Fixed BFS relaxation rounds (diameter of the fixture backbone is
     * ≤ 3; round 4 is the convergence slack the oracle replays too). */
@@ -124,26 +158,13 @@ object GraphOps extends Family {
 
   /** `heavyBackbone` with the edge weight kept — the label-propagation
     * family tallies neighbor votes BY WEIGHT, not just adjacency. */
-  private[graft] def heavyBackboneW(s: SparkSession, d: String): DataFrame = {
-    val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"), col("w"))
-      .groupBy("a", "b").agg(sum("w").as("w"))
-    val tot = und.agg(sum("w").as("tw"), count(lit(1)).as("ne"))
-    und.join(broadcast(tot))
-      .where(col("w") * col("ne") > col("tw"))
-      .select("a", "b", "w").localCheckpoint()
-  }
+  private[graft] def heavyBackboneW(s: SparkSession, d: String): DataFrame =
+    heavyCut(s, d).select("a", "b", "w").localCheckpoint()
 
-  /** Oracle twin of `heavyBackboneW` (chains after EdgesCte; the und/t
-    * CTEs are shared with HeavyCte's text, duplicated here so each oracle
-    * stays self-contained). */
+  /** Oracle twin of `heavyBackboneW` (chains after EdgesCte). */
   private val HeavyWCte =
-    """und AS MATERIALIZED (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
-      |    CAST(SUM(w) AS BIGINT) AS w
-      |  FROM edges WHERE src <> dst GROUP BY 1, 2),
-      |t AS MATERIALIZED (SELECT CAST(SUM(w) AS BIGINT) AS tw, COUNT(*) AS ne FROM und),
-      |hw AS MATERIALIZED (SELECT a, b, w FROM und, t WHERE w * ne > tw)""".stripMargin
+    s"""$UndCtes,
+       |hw AS MATERIALIZED (SELECT a, b, w FROM und, t WHERE w * ne > tw)""".stripMargin
 
   /** Oracle CTE prefix for Round15Ops.graph_louvain_pass (edges + the
     * weighted heavy cut), mirroring `heavyBackboneW`. */
@@ -193,8 +214,7 @@ object GraphOps extends Family {
       // Same wedge join, same diagonal-pair C(cn,2).
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |wd AS (SELECT e1.dst AS u, e2.dst AS v FROM bi e1 JOIN bi e2
          |  ON e1.src = e2.src AND e1.dst < e2.dst)
          |SELECT u, v, CAST(COUNT(*) AS BIGINT) AS cn,
@@ -214,9 +234,7 @@ object GraphOps extends Family {
     // the oracle as chained CTEs.
     Op("graph_node2vec_walk", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
-        .localCheckpoint()
+      val bi = undirected(heavy).localCheckpoint()
       val adj = bi.select(col("src").as("p_src"), col("dst").as("p_dst"))
       var walk = bi.select(col("src").as("start")).distinct()
         .select(col("start"), col("start").as("node"), col("start").as("prev"),
@@ -273,8 +291,7 @@ object GraphOps extends Family {
       val union = (0 to 4).map(i => s"SELECT * FROM w$i").mkString(" UNION ALL ")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |adj AS MATERIALIZED (SELECT src AS p_src, dst AS p_dst FROM bi),
          |w0 AS MATERIALIZED (SELECT DISTINCT src AS start, src AS node, src AS prev,
          |    CAST(0 AS BIGINT) AS step FROM bi),
@@ -291,12 +308,11 @@ object GraphOps extends Family {
     // grade in-band. Distances stay small exact integers.
     Op("graph_eccentricity", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+      val bi = undirected(heavy)
       val nodes = Tables.nation(s, d).select(col("n_nationkey").cast("bigint").as("u"))
       var dist = nodes.crossJoin(nodes.select(col("u").as("v")))
         .withColumn("dist", when(col("u") === col("v"), 0L).otherwise(lit(99L)))
-      for (i <- 1 to BfsIters) {
+      for (_ <- 1 to BfsIters) {
         val relax = dist.join(bi, dist("v") === bi("src"))
           .select(col("u"), col("dst").as("v"), (col("dist") + 1).as("cand"))
           .groupBy("u", "v").agg(min("cand").as("cand"))
@@ -317,25 +333,11 @@ object GraphOps extends Family {
         .orderBy("node")
     },
       // Same relaxation chain as graph_closeness, extremes instead of means.
-      {
-      val iters = (1 to BfsIters).map { i =>
-        val p = s"p${i - 1}"
-        s"""c$i AS MATERIALIZED (SELECT $p.u, bi.dst AS v,
-           |    CAST(MIN($p.dist + 1) AS BIGINT) AS cand
-           |  FROM bi JOIN $p ON $p.v = bi.src GROUP BY 1, 2),
-           |p$i AS MATERIALIZED (SELECT q.u, q.v,
-           |    CAST(LEAST(q.dist, COALESCE(c$i.cand, 99)) AS BIGINT) AS dist
-           |  FROM $p q LEFT JOIN c$i ON c$i.u = q.u AND c$i.v = q.v)"""
-      }.mkString(",\n")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS u FROM nation),
-         |p0 AS MATERIALIZED (SELECT n1.u, n2.u AS v,
-         |    CAST(CASE WHEN n1.u = n2.u THEN 0 ELSE 99 END AS BIGINT) AS dist
-         |  FROM nodes n1, nodes n2),
-         |$iters,
+         |${hopDistCtes(BfsIters)},
          |ec AS (SELECT u, CAST(MAX(dist) AS BIGINT) AS ecc,
          |    CAST(COUNT(*) AS BIGINT) AS n_reach
          |  FROM p$BfsIters WHERE u <> v AND dist < 99 GROUP BY 1),
@@ -343,8 +345,7 @@ object GraphOps extends Family {
          |    CAST(MAX(ecc) AS BIGINT) AS diameter FROM ec)
          |SELECT u AS node, n_reach, ecc, radius, diameter,
          |  ecc = radius AS central, ecc = diameter AS peripheral
-         |FROM ec CROSS JOIN bd ORDER BY node""".stripMargin
-    }),
+         |FROM ec CROSS JOIN bd ORDER BY node""".stripMargin),
 
     // Directed dyad + triangle census — the motif SPECTRUM reading of the
     // trade graph (graph_triangles counts undirected closure; this
@@ -728,7 +729,7 @@ object GraphOps extends Family {
         .unionAll(heavy.select(col("b").as("src"), col("a").as("dst")))
       val nodes = Tables.nation(s, d).select(col("n_nationkey").as("node"))
       var comp = nodes.withColumn("comp", col("node").cast("long"))
-      for (i <- 1 to CcIters) {
+      for (_ <- 1 to CcIters) {
         val cand = bi.join(comp.select(col("node").as("src"), col("comp").as("scomp")), "src")
           .groupBy(col("dst").as("node")).agg(min("scomp").as("cand"))
         comp = comp.join(cand, Seq("node"), "left")
@@ -849,7 +850,7 @@ object GraphOps extends Family {
     // the nodes that survive in the k-core with their in-core degree.
     Op("graph_kcore", (s, d) => {
       var edges = heavyBackbone(s, d)
-      for (i <- 1 to KcIters) {
+      for (_ <- 1 to KcIters) {
         val keep = edges.select(col("a").as("n"))
           .unionAll(edges.select(col("b").as("n")))
           .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -909,8 +910,7 @@ object GraphOps extends Family {
     // keyed (u, v); per-pair state is one long.
     Op("graph_closeness", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+      val bi = undirected(heavy)
       val nodes = Tables.nation(s, d).select(col("n_nationkey").cast("bigint").as("u"))
       var dist = nodes.crossJoin(nodes.select(col("u").as("v")))
         .withColumn("dist", when(col("u") === col("v"), 0L).otherwise(lit(99L)))
@@ -937,33 +937,18 @@ object GraphOps extends Family {
     },
       // The BfsIters all-pairs relaxation rounds replayed as chained CTEs,
       // then the 1e6 DIV d harmonic rollup.
-      {
-      val iters = (1 to BfsIters).map { i =>
-        val p = s"p${i - 1}"
-        s"""c$i AS MATERIALIZED (SELECT $p.u, bi.dst AS v,
-           |    CAST(MIN($p.dist + 1) AS BIGINT) AS cand
-           |  FROM bi JOIN $p ON $p.v = bi.src GROUP BY 1, 2),
-           |p$i AS MATERIALIZED (SELECT q.u, q.v,
-           |    CAST(LEAST(q.dist, COALESCE(c$i.cand, 99)) AS BIGINT) AS dist
-           |  FROM $p q LEFT JOIN c$i ON c$i.u = q.u AND c$i.v = q.v)"""
-      }.mkString(",\n")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS u FROM nation),
-         |p0 AS MATERIALIZED (SELECT n1.u, n2.u AS v,
-         |    CAST(CASE WHEN n1.u = n2.u THEN 0 ELSE 99 END AS BIGINT) AS dist
-         |  FROM nodes n1, nodes n2),
-         |$iters,
+         |${hopDistCtes(BfsIters)},
          |hc AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS n_reach,
          |    CAST(SUM(1000000 // dist) AS BIGINT) AS harmonic_micro
          |  FROM p$BfsIters WHERE u <> v AND dist < 99 GROUP BY u)
          |SELECT nodes.u AS node, CAST(COALESCE(n_reach, 0) AS BIGINT) AS n_reach,
          |  CAST(COALESCE(harmonic_micro, 0) AS BIGINT) AS harmonic_micro
          |FROM nodes LEFT JOIN hc ON hc.u = nodes.u
-         |ORDER BY node""".stripMargin
-    }),
+         |ORDER BY node""".stripMargin),
 
     // Shortest-path counts (σ_st from graph_bfs's source — the Brandes
     // forward pass / path-redundancy metric): level-synchronous BFS where
@@ -976,8 +961,7 @@ object GraphOps extends Family {
     // node.
     Op("graph_path_counts", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+      val bi = undirected(heavy)
       val srcId = heavy.agg(min(col("a")).cast("long")).collect()(0).getLong(0)
       var layer = s.range(1)
         .select(lit(srcId).as("node"), lit(1L).as("np"), lit(0L).as("dist"))
@@ -1013,8 +997,7 @@ object GraphOps extends Family {
       val union = (0 to BfsIters).map(i => s"SELECT * FROM f$i").mkString(" UNION ALL ")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |f0 AS MATERIALIZED (SELECT CAST((SELECT MIN(a) FROM h) AS BIGINT) AS node,
          |    CAST(1 AS BIGINT) AS np, CAST(0 AS BIGINT) AS dist),
          |v0 AS (SELECT node FROM f0),
@@ -1035,9 +1018,7 @@ object GraphOps extends Family {
     // and the triple join stays keyed on the middle node.
     Op("graph_stress", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
-        .localCheckpoint()
+      val bi = undirected(heavy).localCheckpoint()
       val nodes = Tables.nation(s, d).select(col("n_nationkey").cast("bigint").as("u"))
       var dist = nodes.crossJoin(nodes.select(col("u").as("v")))
         .withColumn("dist", when(col("u") === col("v"), 0L).otherwise(lit(99L)))
@@ -1084,15 +1065,6 @@ object GraphOps extends Family {
       // All-pairs dist rounds + all-pairs layered path counts + the
       // through-node triple join, all replayed from the same constants.
       {
-      val dIters = (1 to BfsIters).map { i =>
-        val p = s"p${i - 1}"
-        s"""c$i AS MATERIALIZED (SELECT $p.u, bi.dst AS v,
-           |    CAST(MIN($p.dist + 1) AS BIGINT) AS cand
-           |  FROM bi JOIN $p ON $p.v = bi.src GROUP BY 1, 2),
-           |p$i AS MATERIALIZED (SELECT q.u, q.v,
-           |    CAST(LEAST(q.dist, COALESCE(c$i.cand, 99)) AS BIGINT) AS dist
-           |  FROM $p q LEFT JOIN c$i ON c$i.u = q.u AND c$i.v = q.v)"""
-      }.mkString(",\n")
       val nIters = (1 to BfsIters).map { i =>
         s"""n$i AS MATERIALIZED (SELECT l.u, bi.dst AS v,
            |    CAST(SUM(l.np) AS BIGINT) AS np, CAST($i AS BIGINT) AS dist
@@ -1103,13 +1075,9 @@ object GraphOps extends Family {
       val union = (1 to BfsIters).map(i => s"SELECT * FROM n$i").mkString(" UNION ALL ")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS u FROM nation),
-         |p0 AS MATERIALIZED (SELECT n1.u, n2.u AS v,
-         |    CAST(CASE WHEN n1.u = n2.u THEN 0 ELSE 99 END AS BIGINT) AS dist
-         |  FROM nodes n1, nodes n2),
-         |$dIters,
+         |${hopDistCtes(BfsIters)},
          |n0 AS MATERIALIZED (SELECT u, u AS v, CAST(1 AS BIGINT) AS np,
          |    CAST(0 AS BIGINT) AS dist FROM nodes),
          |$nIters,
@@ -1135,9 +1103,7 @@ object GraphOps extends Family {
     // adjacency); everything integer → hash-graded.
     Op("graph_jaccard_link_pred", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
-        .localCheckpoint()
+      val bi = undirected(heavy).localCheckpoint()
       val deg = bi.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val cn = bi.select(col("src").as("n"), col("dst").as("u"))
         .join(bi.select(col("src").as("n"), col("dst").as("v")), Seq("n"))
@@ -1152,8 +1118,7 @@ object GraphOps extends Family {
     },
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM bi GROUP BY 1),
          |cn AS (SELECT x.dst AS u, y.dst AS v, CAST(COUNT(*) AS BIGINT) AS cn
          |  FROM bi x JOIN bi y ON x.src = y.src AND x.dst < y.dst
@@ -1177,9 +1142,7 @@ object GraphOps extends Family {
     // the hub z, never all-pairs.
     Op("graph_resource_alloc_link_pred", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
-        .localCheckpoint()
+      val bi = undirected(heavy).localCheckpoint()
       val deg = bi.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       bi.select(col("src").as("z"), col("dst").as("u"))
         .join(bi.select(col("src").as("z"), col("dst").as("v")), Seq("z"))
@@ -1195,8 +1158,7 @@ object GraphOps extends Family {
       // Same wedge enumeration, same per-term micro-unit truncation.
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM bi GROUP BY 1),
          |wed AS (SELECT x.dst AS u, y.dst AS v, CAST(COUNT(*) AS BIGINT) AS cn,
          |    CAST(SUM(1000000 // dz.deg) AS BIGINT) AS ra_micro
@@ -1219,8 +1181,7 @@ object GraphOps extends Family {
     // steps cost k keyed joins; at 100 TB walks shard by start node.
     Op("graph_random_walk", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+      val bi = undirected(heavy)
       val ad = bi
         .withColumn("r", row_number().over(
           Window.partitionBy("src").orderBy("dst")).cast("bigint") - 1)
@@ -1253,8 +1214,7 @@ object GraphOps extends Family {
       val union = (0 to 4).map(i => s"SELECT * FROM w$i").mkString(" UNION ALL ")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |ad AS MATERIALIZED (SELECT src, dst,
          |    CAST(ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) AS BIGINT) - 1 AS r,
          |    CAST(COUNT(*) OVER (PARTITION BY src) AS BIGINT) AS deg
@@ -1341,8 +1301,7 @@ object GraphOps extends Family {
     // whole shuffle footprint at any scale.
     Op("graph_assortativity", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+      val bi = undirected(heavy)
       val deg = bi.groupBy("src").agg(count(lit(1)).as("deg"))
       bi.join(deg.select(col("src"), col("deg").as("x")), Seq("src"))
         .join(deg.select(col("src").as("dst"), col("deg").as("y")), Seq("dst"))
@@ -1357,8 +1316,7 @@ object GraphOps extends Family {
       // Same symmetric-marginal identity, same exact pair + one division.
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM bi GROUP BY 1),
          |e AS (SELECT dx.deg AS x, dy.deg AS y
          |  FROM bi JOIN deg dx ON dx.src = bi.src JOIN deg dy ON dy.src = bi.dst),
@@ -1584,9 +1542,7 @@ object GraphOps extends Family {
     // the relaxation runs per landmark sample; the output is O(1).
     Op("graph_path_stats", (s, d) => {
       val heavy = heavyBackbone(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
-        .localCheckpoint()
+      val bi = undirected(heavy).localCheckpoint()
       val nodes = Tables.nation(s, d).select(col("n_nationkey").cast("bigint").as("u"))
       var dist = nodes.crossJoin(nodes.select(col("u").as("v")))
         .withColumn("dist", when(col("u") === col("v"), 0L).otherwise(lit(99L)))
@@ -1607,33 +1563,18 @@ object GraphOps extends Family {
         .withColumn("avg_path_milli", expr("(sum_dist * 1000) DIV n_reachable"))
     },
       // Same relaxation rounds, same unordered-pair rollup.
-      {
-      val dIters = (1 to BfsIters).map { i =>
-        val p = s"p${i - 1}"
-        s"""c$i AS MATERIALIZED (SELECT $p.u, bi.dst AS v,
-           |    CAST(MIN($p.dist + 1) AS BIGINT) AS cand
-           |  FROM bi JOIN $p ON $p.v = bi.src GROUP BY 1, 2),
-           |p$i AS MATERIALIZED (SELECT q.u, q.v,
-           |    CAST(LEAST(q.dist, COALESCE(c$i.cand, 99)) AS BIGINT) AS dist
-           |  FROM $p q LEFT JOIN c$i ON c$i.u = q.u AND c$i.v = q.v)"""
-      }.mkString(",\n")
       s"""WITH $EdgesCte,
          |$HeavyCte,
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |$BiCte,
          |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS u FROM nation),
-         |p0 AS MATERIALIZED (SELECT n1.u, n2.u AS v,
-         |    CAST(CASE WHEN n1.u = n2.u THEN 0 ELSE 99 END AS BIGINT) AS dist
-         |  FROM nodes n1, nodes n2),
-         |$dIters
+         |${hopDistCtes(BfsIters)}
          |SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |  CAST(SUM(CASE WHEN dist < 99 THEN 1 ELSE 0 END) AS BIGINT) AS n_reachable,
          |  CAST(SUM(CASE WHEN dist < 99 THEN dist ELSE 0 END) AS BIGINT) AS sum_dist,
          |  CAST(MAX(CASE WHEN dist < 99 THEN dist END) AS BIGINT) AS diameter,
          |  (CAST(SUM(CASE WHEN dist < 99 THEN dist ELSE 0 END) AS BIGINT) * 1000)
          |    // CAST(SUM(CASE WHEN dist < 99 THEN 1 ELSE 0 END) AS BIGINT) AS avg_path_milli
-         |FROM p$BfsIters WHERE u < v""".stripMargin
-    }),
+         |FROM p$BfsIters WHERE u < v""".stripMargin),
 
     // Katz centrality — the attenuated all-walk centrality that PageRank's
     // out-degree normalization hides (a node pointed to by many LOW-degree

@@ -80,7 +80,7 @@ object IcebergRead extends Family {
   }
 
   /** One parquet DATA FILE (not a directory) under the table's data/ dir. */
-  private def writeDataFile(s: SparkSession, df: DataFrame, dir: String, name: String): (String, Long) = {
+  private def writeDataFile(df: DataFrame, dir: String, name: String): (String, Long) = {
     val tmp = s"$dir/_tmp_$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
@@ -135,9 +135,9 @@ object IcebergRead extends Family {
   private def writeTable(s: SparkSession, d: String, root: String): Unit = {
     Files.createDirectories(Paths.get(root, "metadata"))
     val o = Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val (fa, na) = writeDataFile(s, o.where(col("o_orderkey") % 3 === 0), root, "A")
-    val (fb, nb) = writeDataFile(s, o.where(col("o_orderkey") % 3 === 1), root, "B")
-    val (fc, nc) = writeDataFile(s, o.where(col("o_orderkey") % 3 === 2), root, "C")
+    val (fa, na) = writeDataFile(o.where(col("o_orderkey") % 3 === 0), root, "A")
+    val (fb, nb) = writeDataFile(o.where(col("o_orderkey") % 3 === 1), root, "B")
+    val (fc, nc) = writeDataFile(o.where(col("o_orderkey") % 3 === 2), root, "C")
     // snapshot 1001 (seq 1): manifest m1 adds A and B
     val m1 = s"$root/metadata/m1.avro"
     val m1len = writeAvro(m1, ManifestEntrySchema,
@@ -231,7 +231,7 @@ object IcebergRead extends Family {
     if (!Files.exists(v3)) {
       import scala.jdk.CollectionConverters._
       val o = Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val (fd, nd) = writeDataFile(s, o.where(col("o_orderkey") % 3 === 1), root, "D")
+      val (fd, nd) = writeDataFile(o.where(col("o_orderkey") % 3 === 1), root, "D")
       val m3 = s"$root/metadata/m3.avro"
       val m3len = writeAvro(m3, ManifestEntrySchema, Seq(entry(1, 1003L, 3L, fd, nd)))
       // previous snapshot's manifest list (from the CURRENT metadata, not
@@ -350,7 +350,7 @@ object IcebergRead extends Family {
         .select(col("fp").as("file_path", fieldId(2147483546L)),
           col("rp").as("pos", fieldId(2147483545L)))
       val (fdel, ndel) = withConfs(s)("spark.sql.parquet.fieldId.write.enabled" -> "true") {
-        writeDataFile(s, delDf, root, "A-deletes")
+        writeDataFile(delDf, root, "A-deletes")
       }
       val m3 = s"$root/metadata/m3-deletes.avro"
       val delEntry = {
@@ -423,7 +423,7 @@ object IcebergRead extends Family {
         .where(col("o_orderkey") % 14 === 0)
         .select(col("o_orderkey").as("o_orderkey", fieldId))
       val (fdel, ndel) = withConfs(s)("spark.sql.parquet.fieldId.write.enabled" -> "true") {
-        writeDataFile(s, delDf, root, "eq-deletes")
+        writeDataFile(delDf, root, "eq-deletes")
       }
       val m3 = s"$root/metadata/m3-eqdeletes.avro"
       val delEntry = {

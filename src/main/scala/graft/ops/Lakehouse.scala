@@ -254,6 +254,24 @@ object Lakehouse extends Family {
     root
   }
 
+  /** Oracle twin of `ensureTable`'s v2: the post-MERGE rows (`post`:
+    * o_orderkey, o_totalprice, o_year) replayed from `orders` alone. The
+    * batch sits in the lowest key decile (thr = max // 10, the same floor
+    * division in both engines); updates add 100.0 to keys ≡0 mod 7,
+    * inserts clone keys ≡0 mod 11 at key + 10M. */
+  private val V2ReplayCtes =
+    """thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
+      |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
+      |post AS (
+      |  SELECT o_orderkey,
+      |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
+      |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
+      |    o_year
+      |  FROM src
+      |  UNION ALL
+      |  SELECT o_orderkey + 10000000, o_totalprice, o_year
+      |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)""".stripMargin
+
   /** v3 = compaction of v2: every v2 file bin-packed into 2 range-clustered
     * files, committed via CAS against v2 — the standing maintenance job of
     * a lakehouse (streaming appends accrete small files; compaction
@@ -1102,21 +1120,8 @@ object Lakehouse extends Family {
           sum(when(col("o_orderkey") >= 10000000L, 1L).otherwise(0L)).as("n_inserted"))
         .orderBy("o_year")
     },
-      // Post-state replay from the source alone: the batch is confined to the
-      // lowest key decile (thr = max//10, same floor division both engines);
-      // updates bump keys ≡0 mod 7 by 100.0, inserts clone keys ≡0 mod 11
-      // shifted +10M.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      // Post-state replay from the source alone.
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
@@ -1152,17 +1157,7 @@ object Lakehouse extends Family {
         .orderBy("o_year")
     },
       // Compaction must be invisible: v3 reads v2's exact post-state.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
@@ -1182,17 +1177,7 @@ object Lakehouse extends Family {
     },
       // v2 post-state minus the deleted keys (≡0 mod 13 inside the decile;
       // the +10M inserted keys are outside the decile so none are deleted).
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
@@ -1245,17 +1230,7 @@ object Lakehouse extends Family {
     },
       // ACID post-state plus the clone-only batch (base keys ≡0 mod 107
       // shifted +90M), replayed from `orders`.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+      s"""WITH $V2ReplayCtes,
         |clonebatch AS (
         |  SELECT o_orderkey + 90000000 AS o_orderkey, o_totalprice, o_year
         |  FROM post WHERE o_orderkey % 107 = 0 AND o_orderkey < 10000000),
@@ -1281,17 +1256,7 @@ object Lakehouse extends Family {
     },
       // Post-merge state minus the DV'd keys (≡0 mod 17), replayed from
       // `orders` — identical content read through zero rewritten files.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
@@ -1313,17 +1278,7 @@ object Lakehouse extends Family {
         .orderBy("o_year")
     },
       // The purge is invisible: v4 reads exactly v3's content.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
@@ -1496,17 +1451,7 @@ object Lakehouse extends Family {
         .select(lit(1997).as("o_year"), col("n_rows"), col("total"), col("n_inserted"))
     },
       // The re-clustered snapshot reads v2's post-state, filtered to 1997.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT CAST(1997 AS INT) AS o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted
@@ -1530,17 +1475,7 @@ object Lakehouse extends Family {
       // Both writers' batches must survive the conflict: final state = v2
       // post-state + A's rows (+20M, keys ≡0 mod 97 of what A read) + B's
       // rows (+30M, keys ≡0 mod 89).
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+      s"""WITH $V2ReplayCtes,
         |final AS (
         |  SELECT * FROM post
         |  UNION ALL
@@ -1655,17 +1590,7 @@ object Lakehouse extends Family {
     },
       // Cleanup is invisible to the table: the post-state is the ordinary
       // v2 replay, and both verdicts must be TRUE.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  TRUE AS orphan_gone, TRUE AS live_intact
@@ -1722,17 +1647,7 @@ object Lakehouse extends Family {
     },
       // The v2 post-state (same `post` replay as branch_tag) plus the
       // mod-101 staged batch — its presence in MAIN is the publish proof.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+      s"""WITH $V2ReplayCtes,
         |pub AS (
         |  SELECT * FROM post
         |  UNION ALL
@@ -1791,17 +1706,7 @@ object Lakehouse extends Family {
         .unionAll(rollup(readSnapshot(s, root, readRef(root, "release")), "tag_release"))
         .orderBy("branch", "o_year")
     },
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+      s"""WITH $V2ReplayCtes,
         |dev AS (
         |  SELECT * FROM post
         |  UNION ALL
@@ -1841,17 +1746,7 @@ object Lakehouse extends Family {
       // Expiration is content-invisible to the retained snapshot: the
       // CURRENT rollup is v2's exact post-state; the verdict columns must
       // both come back TRUE (no live file lost, expired manifest dropped).
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(SUM(CASE WHEN o_orderkey >= 10000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted,
@@ -1901,17 +1796,7 @@ object Lakehouse extends Family {
     },
       // The incrementally-maintained MV must equal the full v2 recompute —
       // the oracle IS the full recompute, so equality is the grade.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0)
+      s"""WITH $V2ReplayCtes
         |SELECT o_year, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
         |FROM post GROUP BY o_year ORDER BY o_year""".stripMargin),
@@ -1964,17 +1849,7 @@ object Lakehouse extends Family {
       // Post-delete state tagged 'base' plus the backfill batch (keys ≡0
       // mod 101 shifted +40M) tagged 'backfill' — old rows surface the
       // evolved column as NULL on the engine side and coalesce to 'base'.
-      """WITH thr AS (SELECT MAX(o_orderkey) // 10 AS t FROM orders),
-        |src AS (SELECT o_orderkey, year(o_orderdate) AS o_year, o_totalprice FROM orders),
-        |post AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 7 = 0
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice,
-        |    o_year
-        |  FROM src
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_totalprice, o_year
-        |  FROM src WHERE o_orderkey <= (SELECT t FROM thr) AND o_orderkey % 11 = 0),
+      s"""WITH $V2ReplayCtes,
         |kept AS (
         |  SELECT * FROM post
         |  WHERE NOT (o_orderkey % 13 = 0 AND o_orderkey <= (SELECT t FROM thr))),

@@ -27,18 +27,18 @@ object LlmOps extends Family {
           "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
         ))).as("s"))
 
-  /** Default posting-list document-frequency cap: shingles occurring in
-    * more than this many documents are dropped from candidate generation
-    * (and, mirrored, from the oracle CTE). ONE constant feeds both engines
-    * so the cutoff cannot silently diverge. */
-  private[ops] val DfCapDefault = 64
+  /** Posting-list document-frequency cap: shingles occurring in more than
+    * this many documents are dropped from candidate generation (and,
+    * mirrored, from the oracle CTE). ONE constant feeds both engines so
+    * the cutoff cannot silently diverge. */
+  private val DfCap = 64
 
   /** Near-duplicate pairs (a < b) by 3-gram-shingle Jaccard >= 0.5 —
     * shared by `llm_dedup_near` and the cluster/canonicalize stage
     * (`llm_dedup_cluster`). Candidate pairs come from per-shingle POSTING
     * LISTS (group by shingle, emit the co-occurring doc pairs) instead of
     * a self-join — one shuffle on the shingle, pairs bounded by
-    * sum(min(df, cap)²): `graft.dedup.dfCap` (default 64) drops
+    * sum(min(df, cap)²): `DfCap` (64) drops
     * ultra-common "boilerplate" shingles whose posting lists would emit
     * O(df²) pairs — at web scale a single million-doc shingle would
     * otherwise materialize ~10¹² candidates. Dropping a hot shingle only
@@ -47,22 +47,20 @@ object LlmOps extends Family {
     * dups is asserted in LlmScaleSpec. Jaccard stays exact over the
     * surviving shingles (|∩| from the postings, |∪| = |A|+|B|-|∩|).
     */
-  /** Verified near-dup pairs, materialized once per (JVM, sf, dfCap) into
-    * the scratch dir: three consumers (near, cluster, span) share the one
+  /** Verified near-dup pairs, materialized once per (JVM, sf) into the
+    * scratch dir: three consumers (near, cluster, span) share the one
     * posting-list shuffle instead of re-running it — the graph-edge-cache
-    * law. The cache key carries the df cap so conf changes (LlmScaleSpec)
-    * never read a stale pair set. */
+    * law. */
   private[graft] def nearPairs(s: SparkSession, d: String): DataFrame = {
-    val dfCap = s.conf.get("graft.dedup.dfCap", DfCapDefault.toString).toInt
-    require(dfCap >= 2, s"graft.dedup.dfCap ($dfCap) must be >= 2")
-    val dir = Scratch.opDir(s"near_pairs_cap$dfCap", d)
+    val dir = Scratch.opDir("near_pairs", d)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))) {
-      nearPairsCompute(s, d, dfCap).coalesce(1).write.mode("overwrite").parquet(dir)
+      nearPairsCompute(s, d, DfCap).coalesce(1).write.mode("overwrite").parquet(dir)
     }
     s.read.parquet(dir)
   }
 
-  private def nearPairsCompute(s: SparkSession, d: String, dfCap: Int): DataFrame = {
+  /** `nearPairs` with the df cap `dfCap`, computed on every call. */
+  private[graft] def nearPairsCompute(s: SparkSession, d: String, dfCap: Int): DataFrame = {
     // Shuffle the 8-byte xxhash64 of each shingle instead of the ~25-byte
     // string: the posting-list groupBy is the plan's one big exchange and
     // the hash is 3× narrower. Per-doc distinctness happened pre-hash, so
@@ -104,7 +102,7 @@ object LlmOps extends Family {
        |         generate_series(1, len(t) - 2), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
        |       FROM dd),
        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-       |keep AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) BETWEEN 2 AND $DfCapDefault),
+       |keep AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) BETWEEN 2 AND $DfCap),
        |inter AS (SELECT x.doc_id AS a, y.doc_id AS b, COUNT(*) AS c
        |          FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
        |          JOIN keep ON x.s = keep.s

@@ -12,7 +12,7 @@ import graft.Tables
   * and per-doc salient-term extraction.
   *
   * Scale posture: clustering is Pregel-style min-label propagation — a
-  * driver LOOP (bounded by component diameter, ≤ maxIters) over fully
+  * driver LOOP (bounded by component diameter, ≤ CcMaxIters) over fully
   * distributed join+aggregate steps with per-iteration lineage truncation;
   * no vertex set is ever collected. Contamination shuffles on the shingle
   * (the join key a 1000-executor cluster hashes evenly); repetition and
@@ -50,6 +50,11 @@ object LlmPipeline extends Family {
   private val bpeCache =
     scala.collection.concurrent.TrieMap[String, (DataFrame, Seq[(Int, String, String, Long, Long)])]()
 
+  /** Round cap of `llm_dedup_cluster`'s pointer-doubling label
+    * propagation: O(log diameter) rounds, so 20 covers diameters past
+    * 10⁶. A constant, since the oracle's closure has no round cap. */
+  private val CcMaxIters = 20
+
   /** The shared shingle/pair CTEs (ONE copy, in LlmOps next to
     * `nearPairs`) plus the thresholded pair set. */
   private val pairsSql =
@@ -68,14 +73,13 @@ object LlmPipeline extends Family {
     // halves the remaining label-chain depth), making convergence
     // O(log diameter) rounds instead of the O(diameter) of plain
     // propagation — the remedy for adversarial path-shaped graphs at
-    // corpus scale (capped at graft.cc.maxIters; 20 rounds covers
+    // corpus scale (capped at CcMaxIters; 20 rounds covers
     // diameters past 10⁶). Each step is a distributed join +
     // min-aggregate, localCheckpoint truncating the plan between rounds
     // exactly like GraphX's Pregel. Converged labels are asserted (a
     // non-converged exit throws rather than returning wrong clusters).
     Op("llm_dedup_cluster", (s, d) => {
-      val maxIters = s.conf.get("graft.cc.maxIters", "20").toInt
-      val pairs = nearPairsOf(s, d).select("a", "b")
+      val pairs = LlmOps.nearPairs(s, d).select("a", "b")
       val edges = pairs.unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
         .localCheckpoint()
       val nodes = edges.select(col("a").as("id")).distinct()
@@ -93,7 +97,7 @@ object LlmPipeline extends Family {
       var prevSum = lblSum(labels)
       var converged = false
       var iter = 0
-      while (!converged && iter < maxIters) {
+      while (!converged && iter < CcMaxIters) {
         val nbrMin = edges.join(labels, col("b") === col("id"))
           .select(col("a").as("id"), col("lbl"))
         // checkpoint BEFORE the self-join: the jump below joins hop with
@@ -124,7 +128,7 @@ object LlmPipeline extends Family {
         labels = next
         iter += 1
       }
-      require(converged, s"label propagation did not converge in $maxIters iters")
+      require(converged, s"label propagation did not converge in $CcMaxIters iters")
       val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
       labels.join(sizes, "lbl")
         .select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
@@ -872,11 +876,6 @@ object LlmPipeline extends Family {
         |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
         |ORDER BY doc_id""".stripMargin)
   )
-
-  /** Indirection so the shared pair generator lives with its family in
-    * LlmOps but this object reads naturally. */
-  private def nearPairsOf(s: SparkSession, d: String): DataFrame =
-    LlmOps.nearPairs(s, d)
 
   private def bpeTrain(s: SparkSession, d: String)
       : (DataFrame, Seq[(Int, String, String, Long, Long)]) =

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -16,21 +15,16 @@ object LlmScale extends Family {
   private val SrpDims = 64 // embeddings.parquet vector width (TESTDATA.md)
   private val PackCapacity = 2048
 
-  /** Conf-driven SRP-LSH geometry. Defaults: 128 planes banded 8×16 —
-    * 2¹⁶ bucket values PER BAND, so E[bucket size] is n/65536 per band and
-    * the within-bucket candidate join stays near-linear at 10⁹ vectors
-    * (the round-7 4×4-bit layout had 16 values/band: every bucket held
-    * n/16 vectors and the candidate join went quadratic — the suite's
-    * slowest query at 12× the exact sweep). The oracle SQL replays the
-    * DEFAULT geometry; override the knobs only alongside a matching
-    * oracle. Returns (planes, bands, bitsPerBand). */
-  private[graft] def lshConfig(s: SparkSession): (Int, Int, Int) = {
-    val planes = s.conf.get("graft.lsh.planes", "128").toInt
-    val bands = s.conf.get("graft.lsh.bands", "8").toInt
-    require(planes > 0 && bands > 0 && planes % bands == 0,
-      s"graft.lsh.planes ($planes) must be a positive multiple of graft.lsh.bands ($bands)")
-    (planes, bands, planes / bands)
-  }
+  /** SRP-LSH geometry: 128 planes banded 8×16 — 2¹⁶ bucket values PER
+    * BAND, so E[bucket size] is n/65536 per band and the within-bucket
+    * candidate join stays near-linear at 10⁹ vectors (the round-7 4×4-bit
+    * layout had 16 values/band: every bucket held n/16 vectors and the
+    * candidate join went quadratic — the suite's slowest query at 12× the
+    * exact sweep). Constants, not confs: the oracle SQL replays exactly
+    * this geometry. */
+  private[graft] val LshPlanes = 128
+  private[graft] val LshBands = 8
+  private val LshBits = LshPlanes / LshBands
 
   /** Deterministic signed-random-projection hyperplanes, derived from
     * md5("p:k") so the DuckDB oracle rebuilds the IDENTICAL matrix in SQL:
@@ -653,7 +647,6 @@ object LlmScale extends Family {
     // scoring — in DuckDB SQL, so the op is fully hash-graded despite
     // being approximate.
     Op("llm_dedup_embed_lsh", (s, d) => {
-      val (nPlanes, nBands, nBits) = lshConfig(s)
       // `bands` bands × `bits` bits, little-endian per band, via the native
       // SrpBands expression — planes·dim primitive FMAs in one JIT'd loop.
       // (The HOF formulation was quadratic in planes: CollapseProject
@@ -663,7 +656,7 @@ object LlmScale extends Family {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val banded = e.select(col("vec_id"),
-        posexplode(call_function("srp_bands", col("emb"), lit(nPlanes), lit(nBits)))
+        posexplode(call_function("srp_bands", col("emb"), lit(LshPlanes), lit(LshBits)))
           .as(Seq("bidx", "bval")))
       val cand = banded.as("x").join(banded.as("y"),
           col("x.bidx") === col("y.bidx") && col("x.bval") === col("y.bval")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -534,10 +533,8 @@ object Round11Ops extends Family {
     // coreness ships on Pregel-style systems. Oracle replays the same
     // six rounds as generated CTEs; ScalaTest pins c ≥ 6 ≡ graph_kcore.
     Op("graph_coreness", (s, d) => {
-      val base = GraphOps.backboneForCoreness(s, d)
-      val bi = base.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(base.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
-        .localCheckpoint()
+      val base = GraphOps.heavyBackbone(s, d)
+      val bi = GraphOps.undirected(base).localCheckpoint()
       var core = bi.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("c"))
       for (_ <- 1 to 6) {
@@ -566,8 +563,7 @@ object Round11Ops extends Family {
            |  FROM r$t GROUP BY 1)"""
       }.mkString(",\n")
       s"""WITH ${GraphOps.coreOracleCtes},
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |${GraphOps.BiCte},
          |c0 AS MATERIALIZED (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS c
          |  FROM bi GROUP BY 1),
          |$rounds

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -313,10 +313,7 @@ object Round12bOps extends Family {
     Op("win_mfi", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w14 = ord.rowsBetween(-13, 0)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(max("cents").as("h"), min("cents").as("l"),
           expr("max_by(cents, struct(ts_us, event_id))").as("c"),
@@ -338,9 +335,7 @@ object Round12bOps extends Family {
     },
       // Same daily bars (composite max_by law), same direction split, same
       // rolling sums.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH $TicksCte,
         |bar AS (SELECT event_type, day,
         |    MAX(cents) AS h, MIN(cents) AS l,
         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c,
@@ -844,9 +839,8 @@ object Round12bOps extends Family {
     // in milli. Same level-synchronous BFS relaxation (4 rounds, mid
     // checkpoint — the plan-doubling law), bounded 25-node domain.
     Op("graph_wiener_index", (s, d) => {
-      val heavy = GraphOps.backboneForCoreness(s, d)
-      val bi = heavy.select(col("a").cast("bigint").as("src"), col("b").cast("bigint").as("dst"))
-        .unionAll(heavy.select(col("b").cast("bigint").as("src"), col("a").cast("bigint").as("dst")))
+      val heavy = GraphOps.heavyBackbone(s, d)
+      val bi = GraphOps.undirected(heavy)
       val nodes = Tables.nation(s, d).select(col("n_nationkey").cast("bigint").as("u"))
       var dist = nodes.crossJoin(nodes.select(col("u").as("v")))
         .withColumn("dist", when(col("u") === col("v"), 0L).otherwise(lit(99L)))
@@ -872,24 +866,10 @@ object Round12bOps extends Family {
     },
       // Same backbone CTEs (shared with the graph family), same 4 BFS
       // relaxation rounds, same truncated per-pair efficiency terms.
-      {
-      val iters = (1 to 4).map { i =>
-        val p = s"p${i - 1}"
-        s"""c$i AS MATERIALIZED (SELECT $p.u, bi.dst AS v,
-           |    CAST(MIN($p.dist + 1) AS BIGINT) AS cand
-           |  FROM bi JOIN $p ON $p.v = bi.src GROUP BY 1, 2),
-           |p$i AS MATERIALIZED (SELECT q.u, q.v,
-           |    CAST(LEAST(q.dist, COALESCE(c$i.cand, 99)) AS BIGINT) AS dist
-           |  FROM $p q LEFT JOIN c$i ON c$i.u = q.u AND c$i.v = q.v)"""
-      }.mkString(",\n")
       s"""WITH ${GraphOps.coreOracleCtes},
-         |bi AS MATERIALIZED (SELECT CAST(a AS BIGINT) AS src, CAST(b AS BIGINT) AS dst FROM h
-         |       UNION ALL SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM h),
+         |${GraphOps.BiCte},
          |nodes AS (SELECT CAST(n_nationkey AS BIGINT) AS u FROM nation),
-         |p0 AS MATERIALIZED (SELECT n1.u, n2.u AS v,
-         |    CAST(CASE WHEN n1.u = n2.u THEN 0 ELSE 99 END AS BIGINT) AS dist
-         |  FROM nodes n1, nodes n2),
-         |$iters,
+         |${GraphOps.hopDistCtes(4)},
          |agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |    CAST(SUM(dist) AS BIGINT) AS wiener,
          |    CAST(MAX(dist) AS BIGINT) AS diameter,
@@ -898,8 +878,7 @@ object Round12bOps extends Family {
          |SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_nodes,
          |  n_pairs, wiener, diameter, eff_sum_micro,
          |  wiener * 1000 // n_pairs AS avg_dist_milli
-         |FROM agg""".stripMargin
-    }),
+         |FROM agg""".stripMargin),
 
     // Direct + indirect (SMR) epidemiological standardization — the
     // stratum-confounding corrector: planted rising event rate over 8
@@ -960,10 +939,7 @@ object Round12bOps extends Family {
     // ~day-count rollup.
     Op("win_force_index", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"),
           count(lit(1)).as("volume"))
@@ -979,9 +955,7 @@ object Round12bOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same daily bars, same 13-bar rolling pressure sum.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH $TicksCte,
         |bar AS (SELECT event_type, day,
         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c,
         |    CAST(COUNT(*) AS BIGINT) AS volume
@@ -1008,10 +982,7 @@ object Round12bOps extends Family {
         coalesce(lag(col("c"), i).over(ord) * wt, lit(0L)) }
       val denom = KeltnerW.zipWithIndex.map { case (wt, i) =>
         when(lag(col("c"), i).over(ord).isNotNull, wt).otherwise(0L) }
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(max("cents").as("h"), min("cents").as("l"),
           expr("max_by(cents, struct(ts_us, event_id))").as("c"))
@@ -1038,9 +1009,7 @@ object Round12bOps extends Family {
       val den = KeltnerW.zipWithIndex
         .map { case (wt, i) => s"CASE WHEN c$i IS NULL THEN 0 ELSE $wt END" }
         .mkString(" + ")
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH $TicksCte,
          |bar AS (SELECT event_type, day,
          |    MAX(cents) AS h, MIN(cents) AS l,
          |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
@@ -1791,10 +1760,7 @@ object Round12bOps extends Family {
     Op("win_heikin_ashi", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val wPrev = ord.rowsBetween(Window.unboundedPreceding, -1)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(expr("min_by(cents, struct(ts_us, event_id))").as("o"),
           max("cents").as("h"), min("cents").as("l"),
@@ -1815,9 +1781,7 @@ object Round12bOps extends Family {
     },
       // Same bars, same truncating midpoint chain (recursion replaces the
       // Spark-side prefix fold).
-      """WITH RECURSIVE e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH RECURSIVE $TicksCte,
         |bar AS (SELECT event_type, day,
         |    MIN_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS o,
         |    MAX(cents) AS h, MIN(cents) AS l,
@@ -1858,12 +1822,7 @@ object Round12bOps extends Family {
           .withColumn(s"${dst}_den", denom.reduce(_ + _))
           .withColumn(dst, expr(s"${dst}_num DIV ${dst}_den"))
       }
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
       fold("e2", "e3")(fold("e1", "e2")(fold("c", "e1")(bars)))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("pe3", lag("e3", 1).over(ord))
@@ -1884,12 +1843,8 @@ object Round12bOps extends Family {
         }.mkString(" + ")
         s"SELECT *, ($num) // ($den) AS $dst"
       }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |s1 AS (${stage("c", "e1")} FROM bar
          |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
          |s2 AS (${stage("e1", "e2")} FROM s1

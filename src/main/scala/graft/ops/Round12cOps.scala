@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -69,10 +69,7 @@ object Round12cOps extends Family {
             s"CASE WHEN ${dst}_n < 0 THEN -((-${dst}_n) DIV ${dst}_d) " +
               s"ELSE ${dst}_n DIV ${dst}_d END"))
       }
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      val bars = priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(max("cents").as("h"), min("cents").as("l"),
           expr("max_by(cents, struct(ts_us, event_id))").as("c"),
@@ -108,9 +105,7 @@ object Round12cOps extends Family {
            |    THEN -((-($num)) // ($den)) ELSE ($num) // ($den) END AS $dst"""
           .stripMargin
       }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH $TicksCte,
          |bar AS (SELECT event_type, day, MAX(cents) AS h, MIN(cents) AS l,
          |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c,
          |    CAST(COUNT(*) AS BIGINT) AS vol
@@ -413,10 +408,7 @@ object Round12cOps extends Family {
             coalesce(lag(col(src), 1).over(ord) * 2, lit(0L)) +
             coalesce(lag(col(src), 2).over(ord) * 2, lit(0L)) +
             coalesce(lag(col(src), 3).over(ord), lit(0L)))
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      val bars = priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(expr("min_by(cents, struct(ts_us, event_id))").as("o"),
           max("cents").as("h"), min("cents").as("l"),
@@ -443,9 +435,7 @@ object Round12cOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same SWMA weights, same sign-split ppm ratio, same rn gate.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH $TicksCte,
         |bar AS (SELECT event_type, day,
         |    MIN_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS o,
         |    MAX(cents) AS h, MIN(cents) AS l,
@@ -638,12 +628,7 @@ object Round12cOps extends Family {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val byMean = Window.partitionBy("event_type")
         .orderBy("paa_milli", "seg_idx")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("seg_idx", expr("(rn - 1) DIV 5"))
         .groupBy("event_type", "seg_idx")
@@ -657,12 +642,8 @@ object Round12cOps extends Family {
         .orderBy("event_type", "seg_idx")
     },
       // Same 5-bar segments, same milli means, same ntile symbolization.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |seg AS (SELECT event_type,
         |    (CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day)
         |      AS BIGINT) - 1) // 5 AS seg_idx, c
@@ -693,12 +674,7 @@ object Round12cOps extends Family {
            |    DIV CAST(den AS DECIMAL(38,0)))
            |  ELSE (CAST($num AS DECIMAL(38,0)) * 1000000)
            |    DIV CAST(den AS DECIMAL(38,0)) END AS BIGINT)""".stripMargin
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("nb", count(lit(1)).over(all))
         .withColumn("sm", sum("c").over(all))
         .withColumn("dev", expr("nb * c - sm"))
@@ -724,12 +700,8 @@ object Round12cOps extends Family {
            |  THEN -((CAST(-$num AS HUGEINT) * 1000000) // den)
            |  ELSE (CAST($num AS HUGEINT) * 1000000) // den END AS BIGINT)"""
           .stripMargin
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |dv AS (SELECT event_type, day,
          |    CAST(COUNT(*) OVER (PARTITION BY event_type) AS BIGINT) AS nb,
          |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm, c
@@ -803,10 +775,7 @@ object Round12cOps extends Family {
       def span(k: Int, src: String, dst: String)(df: DataFrame): DataFrame =
         df.withColumn(dst,
           sum(col(src)).over(ord.rowsBetween(-(k - 1), 0)))
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      val bars = priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(max("cents").as("h"), min("cents").as("l"),
           expr("max_by(cents, struct(ts_us, event_id))").as("c"))
@@ -832,9 +801,7 @@ object Round12cOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same bars, same horizon sums, same HUGEINT cross-multiplied blend.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH $TicksCte,
         |bar AS (SELECT event_type, day, MAX(cents) AS h, MIN(cents) AS l,
         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
         |  FROM e GROUP BY 1, 2),
@@ -868,12 +835,7 @@ object Round12cOps extends Family {
     // permutation-entropy front end without the log.
     Op("win_ordinal_patterns", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("c1", lag("c", 1).over(ord))
         .withColumn("c2", lag("c", 2).over(ord))
         .where(col("c2").isNotNull)
@@ -888,12 +850,8 @@ object Round12cOps extends Family {
         .orderBy("event_type", "pattern")
     },
       // Same triple signs under ties.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |lg AS (SELECT *, lag(c, 1) OVER o AS c1, lag(c, 2) OVER o AS c2
         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
         |pat AS (SELECT event_type, CONCAT(
@@ -1459,12 +1417,7 @@ object Round12cOps extends Family {
       val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val inGrp = Window.partitionBy("event_type", "grp").orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("c4", lag("c", 4).over(ord))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("flag", expr(
@@ -1477,12 +1430,8 @@ object Round12cOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same reset pattern, same 4-bar reference.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |f AS (SELECT *, lag(c, 4) OVER o AS c4,
         |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
@@ -1617,12 +1566,7 @@ object Round12cOps extends Family {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val trail = ord.rowsBetween(-19, 0)
       val ratios = Seq(236, 382, 500, 618, 786)
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("hi20", max("c").over(trail))
         .withColumn("lo20", min("c").over(trail))
@@ -1653,12 +1597,8 @@ object Round12cOps extends Family {
       val caseNearest = (1 to 5).map { i =>
         s"WHEN ABS(c - lv$i) = mind THEN CAST($i AS BIGINT)" }
         .mkString("CASE ", " ", " END")
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |w AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
          |    MAX(c) OVER (o ROWS 19 PRECEDING) AS hi20,
          |    MIN(c) OVER (o ROWS 19 PRECEDING) AS lo20
@@ -1678,12 +1618,7 @@ object Round12cOps extends Family {
     // grade the whole statistic exactly. Per series, one sort.
     Op("agg_sharpe_ratio", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("r", col("c") - lag("c", 1).over(ord))
         .where(col("r").isNotNull)
         .groupBy("event_type")
@@ -1700,12 +1635,8 @@ object Round12cOps extends Family {
         .orderBy("event_type")
     },
       // Same returns, same corrected-root σ·n, same sign-split milli.
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |r AS (SELECT event_type, c - lag(c, 1) OVER o AS r
          |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
          |a AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1802,12 +1733,7 @@ object Round12cOps extends Family {
     // sign-split milli. The tracking-error statistic with no float.
     Op("win_information_ratio", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("r", col("c") - lag("c", 1).over(ord))
         .where(col("r").isNotNull)
       val bench = bars.where(col("event_type") === "view")
@@ -1827,12 +1753,8 @@ object Round12cOps extends Family {
         .orderBy("event_type")
     },
       // Same benchmark join, same tracking-error root, same milli ratio.
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |r AS (SELECT event_type, day, c - lag(c, 1) OVER o AS r
          |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
          |b AS (SELECT day, r AS rb FROM r
@@ -1934,12 +1856,7 @@ object Round12cOps extends Family {
               s"ELSE ${dst}_n DIV ${dst}_d END"))
       }
       val ordT = Window.partitionBy("event_type").orderBy("day")
-      val breadth = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val breadth = closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("r", col("c") - lag("c", 1).over(ordT))
         .where(col("r").isNotNull)
         .groupBy("day")
@@ -1967,12 +1884,8 @@ object Round12cOps extends Family {
            |    THEN -((-($num)) // ($den)) ELSE ($num) // ($den) END AS $dst"""
           .stripMargin
       }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |r AS (SELECT event_type, day, c - lag(c, 1) OVER o AS r
          |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
          |br AS (SELECT day,
@@ -1999,12 +1912,7 @@ object Round12cOps extends Family {
       val byC = Window.partitionBy("event_type").orderBy("c", "day")
       val byT = Window.partitionBy("event_type")
       val byD = Window.partitionBy("event_type").orderBy("absdev", "day")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("n", count(lit(1)).over(byT))
         .withColumn("rc", row_number().over(byC).cast("bigint"))
         .withColumn("med", max(when(
@@ -2021,12 +1929,8 @@ object Round12cOps extends Family {
         .orderBy("event_type")
     },
       // Same rank selections, same 5·MAD fence.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |rk AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
         |      AS BIGINT) AS n,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -235,12 +235,7 @@ object Round12dOps extends Family {
         df.withColumn(s"${dst}_n", num).withColumn(s"${dst}_d", den)
           .withColumn(dst, expr(s"${dst}_n DIV ${dst}_d"))
       }
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
       fold("e2", "e3")(fold("e1", "e2")(fold("c", "e1")(bars)))
         .withColumn("tema", expr("3 * e1 - 3 * e2 + e3"))
         .select("event_type", "day", "c", "e1", "e2", "e3", "tema")
@@ -259,12 +254,8 @@ object Round12dOps extends Family {
           .mkString(" + ")
         s"SELECT *, ($num) // ($den) AS $dst"
       }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |s1 AS (${stage("c", "e1")} FROM bar
          |  WINDOW o AS (PARTITION BY event_type ORDER BY day)),
          |s2 AS (${stage("e1", "e2")} FROM s1
@@ -281,12 +272,7 @@ object Round12dOps extends Family {
     // (n·Σx²−S²), all integers); Chebyshev's 1−1/k² floor is graded in
     // the spec. One aggregate + one broadcast-back join.
     Op("agg_chebyshev_coverage", (s, d) => {
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
       val stats = bars.groupBy(col("event_type").as("et"))
         .agg(count(lit(1)).as("n"), sum("c").as("sm"),
           sum(expr("c * c")).as("ssq"))
@@ -306,12 +292,8 @@ object Round12dOps extends Family {
         .orderBy("event_type")
     },
       // Same n-scaled deviations, same corrected-root fences.
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |st AS (SELECT event_type AS et, CAST(COUNT(*) AS BIGINT) AS n,
          |    CAST(SUM(c) AS BIGINT) AS sm,
          |    CAST(SUM(c * c) AS BIGINT) AS ssq
@@ -662,12 +644,7 @@ object Round12dOps extends Family {
             s"""CASE WHEN c$k IS NULL THEN NULL
                |  WHEN c - c$k < 0 THEN -((c$k - c) * 1000000 DIV c$k)
                |  ELSE (c - c$k) * 1000000 DIV c$k END""".stripMargin))
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
       val withRoc = roc(11, "roc11")(roc(14, "roc14")(bars))
         .withColumn("mom", expr("roc14 + roc11"))
@@ -692,12 +669,8 @@ object Round12dOps extends Family {
            |END AS $dst""".stripMargin
       val wsum = (0 until 10).map(i =>
         s"COALESCE(lag(mom, $i) OVER o * ${10 - i}, 0)").mkString(" + ")
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |r AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
          |    ${roc(14, "roc14")}, ${roc(11, "roc11")}
          |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
@@ -786,12 +759,7 @@ object Round12dOps extends Family {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val all = Window.partitionBy("event_type")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("n", count(lit(1)).over(all))
         .withColumn("sm", sum("c").over(all))
         .withColumn("dev", expr("n * c - sm"))
@@ -807,12 +775,8 @@ object Round12dOps extends Family {
         .orderBy("event_type")
     },
       // Same n-scaled range, same corrected-root denominator.
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |dv AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
          |      AS BIGINT) AS n,
          |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm
@@ -916,12 +880,7 @@ object Round12dOps extends Family {
     Op("win_cmo", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w14 = ord.rowsBetween(-13, 0)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("r", col("c") - lag("c", 1).over(ord))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("up", sum(expr(
@@ -937,12 +896,8 @@ object Round12dOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same 14-bar gain/loss split, same sign-split ratio.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |r AS (SELECT *, c - lag(c, 1) OVER o AS r,
         |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
@@ -1161,12 +1116,7 @@ object Round12dOps extends Family {
     Op("win_dpo", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w11 = ord.rowsBetween(-10, 0)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("rn", row_number().over(ord).cast("bigint"))
         .withColumn("sum11", sum("c").over(w11))
         .withColumn("sma11", expr("sum11 DIV 11"))
@@ -1177,12 +1127,8 @@ object Round12dOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same truncating SMA, same 11-bar shift.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |w AS (SELECT *, CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn,
         |    CAST(SUM(c) OVER (o ROWS 10 PRECEDING) AS BIGINT) // 11
         |      AS sma11
@@ -1370,12 +1316,7 @@ object Round12dOps extends Family {
     // float, no root); per series.
     Op("agg_mean_abs_dev", (s, d) => {
       val all = Window.partitionBy("event_type")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("n", count(lit(1)).over(all))
         .withColumn("sm", sum("c").over(all))
         .groupBy("event_type")
@@ -1385,12 +1326,8 @@ object Round12dOps extends Family {
         .orderBy("event_type")
     },
       // Same n-scaled L1 sum.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |dv AS (SELECT *, CAST(COUNT(*) OVER (PARTITION BY event_type)
         |      AS BIGINT) AS n,
         |    CAST(SUM(c) OVER (PARTITION BY event_type) AS BIGINT) AS sm
@@ -1667,12 +1604,7 @@ object Round12dOps extends Family {
     Op("win_psy_line", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w12 = ord.rowsBetween(-11, 0)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("up", expr(
           "CASE WHEN c > lag(c, 1) OVER " +
             "(PARTITION BY event_type ORDER BY day) THEN 1L ELSE 0L END"))
@@ -1684,12 +1616,8 @@ object Round12dOps extends Family {
         .orderBy("event_type", "day")
     },
       // Same trailing up-census.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |u AS (SELECT *, CASE WHEN c > lag(c, 1) OVER o THEN 1 ELSE 0 END
         |      AS up,
         |    CAST(ROW_NUMBER() OVER o AS BIGINT) AS rn
@@ -2000,12 +1928,7 @@ object Round12dOps extends Family {
             s"ELSE ${dst}_n DIV ${dst}_d END"))
         else base.withColumn(dst, expr(s"${dst}_n DIV ${dst}_d"))
       }
-      val bars = Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      val bars = closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("mom", col("c") - lag("c", 1).over(ord))
         .where(col("mom").isNotNull)
         .withColumn("amom", abs(col("mom")))
@@ -2039,12 +1962,8 @@ object Round12dOps extends Family {
              |    AS $dst""".stripMargin
         else s"SELECT *, ($num) // ($den) AS $dst"
       }
-      s"""WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-         |    epoch_us(ts) // 86400000000 AS day,
-         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-         |bar AS (SELECT event_type, day,
-         |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-         |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+         |$CloseBarsCte,
          |m AS (SELECT event_type, day, c - lag(c, 1) OVER o AS mom
          |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day)),
          |mm AS (SELECT *, ABS(mom) AS amom FROM m WHERE mom IS NOT NULL),
@@ -2201,10 +2120,7 @@ object Round12dOps extends Family {
       val ord = Window.partitionBy("event_type").orderBy("day")
       val w5 = ord.rowsBetween(-4, 0)
       val w13 = ord.rowsBetween(-12, 0)
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
+      priceTicks(Tables.events(s, d))
         .groupBy("event_type", "day")
         .agg(max("cents").as("h"), min("cents").as("l"))
         .withColumn("mid", expr("(h + l) DIV 2"))
@@ -2270,12 +2186,7 @@ object Round12dOps extends Family {
     // seasonal naive? The scale-free forecast-accuracy denominator law.
     Op("agg_mase_naive", (s, d) => {
       val ord = Window.partitionBy("event_type").orderBy("day")
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("ts_us"),
-          expr("ts_us DIV 86400000000").as("day"),
-          floor(col("value") * 100).cast("bigint").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+      closeBars(priceTicks(Tables.events(s, d)))
         .withColumn("e1", abs(col("c") - lag("c", 1).over(ord)))
         .withColumn("e7", abs(col("c") - lag("c", 7).over(ord)))
         .where(col("e7").isNotNull && col("e1").isNotNull)
@@ -2288,12 +2199,8 @@ object Round12dOps extends Family {
         .orderBy("event_type")
     },
       // Same paired naive errors.
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
-        |    epoch_us(ts) // 86400000000 AS day,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events),
-        |bar AS (SELECT event_type, day,
-        |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
-        |  FROM e GROUP BY 1, 2),
+      s"""WITH $TicksCte,
+        |$CloseBarsCte,
         |er AS (SELECT event_type, ABS(c - lag(c, 1) OVER o) AS e1,
         |    ABS(c - lag(c, 7) OVER o) AS e7
         |  FROM bar WINDOW o AS (PARTITION BY event_type ORDER BY day))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -3330,8 +3330,6 @@ object Round15Ops extends Family {
         .withColumn("len", expr(
           s"${md5Bits("bl", "event_id", 6)} % 491 + 10"))
         .localCheckpoint() // both strategies fold over it
-      val wArr = Window.partitionBy("svc").orderBy("event_id")
-      val wLen = Window.partitionBy("svc").orderBy("len", "event_id")
       def waste(assigned: DataFrame, strategy: String): DataFrame =
         assigned.groupBy("svc", "batch")
           .agg(count(lit(1)).as("n"), max("len").as("mx"), sum("len").as("tok"))

@@ -2101,13 +2101,13 @@ object Round16Ops extends Family {
       val base = Tables.orders(s, d).where(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey").cast("bigint").as("k"),
           round(col("o_totalprice") * 100).cast("bigint").as("cents"))
-      def batch(tag: String, rule: Int, nullRule: org.apache.spark.sql.Column) =
+      def batch(rule: Int, nullRule: org.apache.spark.sql.Column) =
         Tables.orders(s, d).where(col("o_orderkey") % 3 === rule)
           .select(col("o_orderkey").cast("bigint").as("k"),
             when(nullRule, lit(null).cast("bigint"))
               .otherwise(round(col("o_totalprice") * 100).cast("bigint")).as("cents"))
-      val bA = batch("a", 1, lit(false))
-      val bB = batch("b", 2, expr(
+      val bA = batch(1, lit(false))
+      val bB = batch(2, expr(
         s"${md5Bits("wb", "o_orderkey", 6)} % 100 < 12"))
       val liveDir = Scratch.opDir("wap_live", d)
       base.write.mode("overwrite").parquet(liveDir)

@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.sql.{Connection, DriverManager}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
 import org.apache.spark.sql.types._
 import graft.Tables

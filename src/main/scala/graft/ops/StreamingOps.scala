@@ -1150,7 +1150,7 @@ object StreamingOps extends Family {
         .withWatermark("v_ts", "10 minutes")
       (p, v)
     }
-    def iCond(p: DataFrame, v: DataFrame) =
+    val iCond =
       col("user_id") === col("v_user") &&
         col("v_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
         col("v_ts") <= col("p_ts")
@@ -1160,7 +1160,7 @@ object StreamingOps extends Family {
       locally { // stream_stream_join — inner correlation join
         val ms = newMs(); val sink = newSinkName()
         val (p, v) = twoSides(ms)
-        val q = p.join(v, iCond(p, v))
+        val q = p.join(v, iCond)
           .select(col("p_id"), col("user_id"), fmt(col("p_ts")).as("p_ts"),
             col("v_id"), fmt(col("v_ts")).as("v_ts"))
           .writeStream.format("memory").queryName(sink).outputMode("append").start()
@@ -1178,7 +1178,7 @@ object StreamingOps extends Family {
       locally { // stream_stream_left — outer-null via two-batch eviction
         val ms = newMs(); val sink = newSinkName()
         val (p, v) = twoSides(ms)
-        val q = p.join(v, iCond(p, v), "left_outer")
+        val q = p.join(v, iCond, "left_outer")
           .select(col("p_id"), col("user_id"), fmt(col("p_ts")).as("p_ts"),
             col("v_id"), fmt(col("v_ts")).as("v_ts"))
           .writeStream.format("memory").queryName(sink).outputMode("append").start()
@@ -1198,7 +1198,7 @@ object StreamingOps extends Family {
       locally { // stream_stream_full — both sides' eviction nulls
         val ms = newMs(); val sink = newSinkName()
         val (p, v) = twoSides(ms)
-        val q = p.join(v, iCond(p, v), "full_outer")
+        val q = p.join(v, iCond, "full_outer")
           .select(col("p_id"), col("user_id"), fmt(col("p_ts")).as("p_ts"),
             col("v_id"), col("v_user"), fmt(col("v_ts")).as("v_ts"))
           .writeStream.format("memory").queryName(sink).outputMode("append").start()
@@ -1218,7 +1218,7 @@ object StreamingOps extends Family {
       locally { // stream_stream_semi — existence, exactly-once emission
         val ms = newMs(); val sink = newSinkName()
         val (p, v) = twoSides(ms)
-        val q = p.join(v, iCond(p, v), "left_semi")
+        val q = p.join(v, iCond, "left_semi")
           .select(col("p_id"), col("user_id"), fmt(col("p_ts")).as("p_ts"))
           .writeStream.format("memory").queryName(sink).outputMode("append").start()
         runs += SharedRun("stream_stream_semi", q, Seq(
@@ -1285,7 +1285,7 @@ object StreamingOps extends Family {
       locally { // stream_stream_right — unmatched VIEWS null-pad on eviction
         val ms = newMs(); val sink = newSinkName()
         val (p, v) = twoSides(ms)
-        val q = p.join(v, iCond(p, v), "right_outer")
+        val q = p.join(v, iCond, "right_outer")
           .select(col("p_id"), col("user_id"), fmt(col("p_ts")).as("p_ts"),
             col("v_id"), col("v_user"), fmt(col("v_ts")).as("v_ts"))
           .writeStream.format("memory").queryName(sink).outputMode("append").start()

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, floor}
 
 /** Helpers shared by every operator family. */
 package object ops {
@@ -36,6 +37,32 @@ package object ops {
   /** `duckMd5Bits` of the namespaced key `'ns:' || id`. */
   private[graft] def duckMd5Bits(ns: String, id: String, hex: Int): String =
     duckMd5Bits(s"'$ns:' || CAST($id AS VARCHAR)", hex)
+
+  /** THE price tick, read by every daily-bar indicator: per event its
+    * (event_type, event_id, ts_us), the UTC day, and the price floored to
+    * whole cents so bars compare exact integers. */
+  private[graft] def priceTicks(events: DataFrame): DataFrame =
+    events.select(col("event_type"), col("event_id"), col("ts_us"),
+      expr("ts_us DIV 86400000000").as("day"),
+      floor(col("value") * 100).cast("bigint").as("cents"))
+
+  /** Daily close bars of `priceTicks`: per (event_type, day), the cents of
+    * the last tick by (ts_us, event_id), so equal timestamps break by id. */
+  private[graft] def closeBars(ticks: DataFrame): DataFrame =
+    ticks.groupBy("event_type", "day")
+      .agg(expr("max_by(cents, struct(ts_us, event_id))").as("c"))
+
+  /** `priceTicks` in DuckDB SQL: the CTE `e`. */
+  private[graft] val TicksCte: String =
+    """e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us,
+      |    epoch_us(ts) // 86400000000 AS day,
+      |    CAST(FLOOR(value * 100) AS BIGINT) AS cents FROM events)""".stripMargin
+
+  /** `closeBars` in DuckDB SQL: the CTE `bar`, over `TicksCte`'s `e`. */
+  private[graft] val CloseBarsCte: String =
+    """bar AS (SELECT event_type, day,
+      |    MAX_BY(cents, CAST(ts_us AS HUGEINT) * 1000000 + event_id) AS c
+      |  FROM e GROUP BY 1, 2)""".stripMargin
 
   /** Runs `body` with the session confs `kv` set, then puts back the exact
     * state from before the call: a key absent from `s.conf.getAll` is

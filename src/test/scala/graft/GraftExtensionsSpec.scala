@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The one deployment path: `GraftExtensions` is listed in the class
   * path's `SparkSessionExtensionsProvider` services file, so every session
-  * gets the native functions, the whole-operator strategies, the
-  * SelfCosineIdentity optimizer rule and the OnePartitionSmallSort runtime
-  * rule when it is built, with no conf and no registration call.
+  * gets the native functions, the whole-operator strategies and the
+  * OnePartitionSmallSort runtime rule when it is built, with no conf and
+  * no registration call.
   */
 class GraftExtensionsSpec extends AnyFunSuite with SparkFixture {
 
@@ -72,38 +72,5 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkFixture {
     assert(names.exists(_.contains("CosineTopKStrategy")), names.mkString(","))
     assert(names.exists(_.contains("AsOfJoinStrategy")))
     assert(names.exists(_.contains("AllPairsCosineStrategy")))
-  }
-
-  test("SelfCosineIdentity folds cosine_sim(x, x) out of the plan") {
-    val df = ext.sql(
-      "SELECT cosine_sim(e, e) AS c FROM " +
-        "(SELECT array(CAST(id AS DOUBLE), 1.0D) AS e FROM range(3))")
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(!optimized.contains("cosine_sim") && !optimized.contains("CosineSimilarity"),
-      s"self-cosine not rewritten:\n$optimized")
-    assert(df.collect().map(_.getDouble(0)).forall(_ == 1.0))
-  }
-
-  test("SelfCosineIdentity keeps the zero-vector convention (0, not 1)") {
-    val r = ext.sql(
-      "SELECT cosine_sim(array(0.0D, 0.0D), array(0.0D, 0.0D)) AS c").collect()(0)
-    assert(r.getDouble(0) == 0.0)
-  }
-
-  test("SelfCosineIdentity preserves NULL and NaN propagation") {
-    val r = ext.sql(
-      "SELECT cosine_sim(e, e) AS c FROM (SELECT CAST(NULL AS ARRAY<DOUBLE>) AS e)")
-      .collect()(0)
-    assert(r.isNullAt(0), "NULL input must stay NULL after the rewrite")
-    val n = ext.sql(
-      "SELECT cosine_sim(array(CAST('NaN' AS DOUBLE), 1.0D), array(CAST('NaN' AS DOUBLE), 1.0D)) AS c")
-      .collect()(0)
-    assert(n.getDouble(0).isNaN, "NaN element must stay NaN after the rewrite")
-  }
-
-  test("SelfCosineIdentity leaves distinct arguments alone") {
-    val df = ext.sql(
-      "SELECT cosine_sim(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c")
-    assert(df.collect()(0).getDouble(0) == 0.0)
   }
 }

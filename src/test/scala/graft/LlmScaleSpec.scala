@@ -73,7 +73,7 @@ class LlmScaleSpec extends AnyFunSuite with SparkFixture {
 
   test("nearPairs df cap bounds hot-shingle pair explosion, keeps rare-shingle recall") {
     // The 100-TB dedup contract: a boilerplate shingle shared by df docs
-    // would emit C(df,2) candidate pairs — graft.dedup.dfCap drops such
+    // would emit C(df,2) candidate pairs — the df cap drops such
     // shingles from candidate generation entirely. Plant 12 identical
     // "boilerplate" docs (every shingle df=12) plus one genuine near-dup
     // pair on rare (df=2) shingles; with cap=8 the 66 boilerplate pairs
@@ -91,13 +91,10 @@ class LlmScaleSpec extends AnyFunSuite with SparkFixture {
         (101L, near2, "en", "synth", near2.length.toLong))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$stage/documents.parquet")
-    spark.conf.set("graft.dedup.dfCap", "8")
-    try {
-      val capped = SparkEntry.queries("llm_dedup_near")(spark, stage).collect()
-      assert(!capped.exists(_.getLong(0) <= 12L), "hot-shingle pairs leaked past the df cap")
-      assert(capped.exists(r => r.getLong(0) == 100L && r.getLong(1) == 101L),
-        "rare-shingle near-dup pair lost under the df cap")
-    } finally spark.conf.unset("graft.dedup.dfCap")
+    val capped = graft.ops.LlmOps.nearPairsCompute(spark, stage, 8).collect()
+    assert(!capped.exists(_.getLong(0) <= 12L), "hot-shingle pairs leaked past the df cap")
+    assert(capped.exists(r => r.getLong(0) == 100L && r.getLong(1) == 101L),
+      "rare-shingle near-dup pair lost under the df cap")
     val full = SparkEntry.queries("llm_dedup_near")(spark, stage).collect()
     assert(full.count(_.getLong(0) <= 12L) == 66,
       "default cap (64) should leave the df=12 boilerplate pairs intact")

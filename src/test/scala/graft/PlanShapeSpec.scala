@@ -262,8 +262,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // bands a bucket holds ~n/2^b vectors, and the within-bucket self-join
     // is quadratic in that. 16-bit bands keep it near-linear; the round-7
     // 4-bit layout (16 values/band) went quadratic and was the suite's
-    // slowest query. Guard the floor so a conf/default regression is loud.
-    val (planes, bands, bits) = graft.ops.LlmScale.lshConfig(spark)
+    // slowest query. Guard the floor so a geometry regression is loud.
+    val planes = graft.ops.LlmScale.LshPlanes
+    val bands = graft.ops.LlmScale.LshBands
+    val bits = planes / bands
     assert(bits >= 16, s"bits/band $bits < 16 — bucket count ${1L << bits} per band")
     assert((bands.toLong << bits) >= 65536L,
       s"total key cardinality ${bands.toLong << bits} < 2^16")

@@ -3,7 +3,7 @@ package graft
 import graft.ops.{duckMd5Bits, md5Bits}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.{Gen, rng}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,6 +52,33 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted
       assert(salted.toSeq == plain.toSeq, s"salt=$salt")
     }
+  }
+
+  test("closeBars(priceTicks) closes each day on the last tick by (ts_us, event_id), ties included") {
+    import scala.jdk.CollectionConverters._
+    val dayUs = 86400000000L
+    // five one-second slots per day, so many ticks share a ts_us and the
+    // event_id tie-break decides the close
+    val drawn = sample(Gen.zip(Gen.oneOf("a", "b", "c"), Gen.choose(0L, 3L),
+      Gen.choose(0L, 4L), Gen.choose(-50000L, 50000L)), 300)
+    val ids = new scala.util.Random(7).shuffle(drawn.indices.map(_.toLong))
+    val ticks = drawn.zip(ids).map { case ((t, day, slot, c), id) =>
+      (t, id, day * dayUs + slot * 1000000L, c / 100.0) }
+    val df = spark.createDataFrame(
+      ticks.map { case (t, id, ts, v) => Row(t, id, ts, v) }.asJava,
+      StructType(Seq(StructField("event_type", StringType), StructField("event_id", LongType),
+        StructField("ts_us", LongType), StructField("value", DoubleType))))
+    val got = graft.ops.closeBars(graft.ops.priceTicks(df)).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val byDay = ticks.groupBy { case (t, _, ts, _) => (t, ts / dayUs) }
+    val want = byDay.map { case (k, g) =>
+      k -> math.floor(g.maxBy { case (_, id, ts, _) => (ts, id) }._4 * 100).toLong }
+    assert(got == want)
+    val tiedCloses = byDay.values.count { g =>
+      val last = g.map(_._3).max
+      g.count(_._3 == last) > 1
+    }
+    assert(tiedCloses > 0, "no day closes on a tied ts_us")
   }
 
   test("conv(substring(md5)) 60-bit hash matches a JVM reference for generated strings") {

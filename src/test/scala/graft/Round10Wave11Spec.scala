@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic checks for the round-10 wave-11 ops beyond the oracle gate. */

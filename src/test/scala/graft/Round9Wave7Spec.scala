@@ -23,7 +23,7 @@ class Round9Wave7Spec extends AnyFunSuite with SparkFixture {
     // no predicted link may already exist: bfs layer-1 neighbors of any
     // node are its adjacency — reuse the walk's step-0→1 edges as a probe
     val walks = SparkEntry.queries("graph_random_walk")(spark, sfDir).collect()
-    val adj = walks.groupBy(_.getLong(0)).flatMap { case (start, rs) =>
+    val adj = walks.groupBy(_.getLong(0)).flatMap { case (_, rs) =>
       val byStep = rs.sortBy(_.getLong(2)).map(_.getLong(1))
       byStep.sliding(2).map(p => (p(0).min(p(1)), p(0).max(p(1))))
     }.toSet

@@ -55,7 +55,6 @@ class SourceSinkSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("source_csv_badrecords: PERMISSIVE parse semantics, line by line") {
-    import org.apache.spark.sql.functions._
     // run the op once so the corrupt corpus is staged
     val agg = SparkEntry.queries("source_csv_badrecords")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
